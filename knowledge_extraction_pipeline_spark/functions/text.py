@@ -49,17 +49,6 @@ def pretokenize(c: Column) -> Column:
     return F.regexp_extract_all(c, F.lit(PRETOKEN_PATTERN), F.lit(0))
 
 
-def has_citations(c: Column) -> Column:
-    """Citation detection, the high-signal subset of the reference's 9 regexes
-    (core/semantic_chunker.py:146-171): (Author et al., 2020) / [1] / [1-3] /
-    'see Figure 5'."""
-    return (
-        c.rlike(r"\([A-Z][a-z]+( et al\.)?,? \d{4}\)")
-        | c.rlike(r"\[\d+(-\d+)?(,\s*\d+)*\]")
-        | c.rlike(r"see (Figure|Table|Section) \d+")
-    )
-
-
 def lang_id(c: Column) -> Column:
     """Stopword-hit language heuristic over {en,es,fr,de,zh}: picks the
     language whose marker words hit most; defaults 'en'. Pure expression —
@@ -101,18 +90,6 @@ def quality_score(c: Column) -> Column:
     stop_score = F.least(F.lit(1.0), 5.0 * stop_hits / F.greatest(wc, F.lit(1.0)))
     punct_penalty = F.least(F.lit(0.5), punct / F.greatest(n.cast("double"), F.lit(1.0)))
     return F.round(0.5 * len_score + 0.5 * stop_score - punct_penalty, 4)
-
-
-def importance_weight(c: Column) -> Column:
-    """critical/high/medium/low → 1.0/0.8/0.6/0.4
-    (scripts/infer_relationships_tfidf.py:77-82), as a when-chain."""
-    from ..config import IMPORTANCE_WEIGHTS
-
-    expr = F.lit(None).cast("double")
-    out = F.when(F.lit(False), expr)
-    for k, v in IMPORTANCE_WEIGHTS.items():
-        out = out.when(c == k, F.lit(v))
-    return out.otherwise(F.lit(0.4))
 
 
 def fingerprint(c: Column) -> Column:

@@ -16,8 +16,6 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-RECONCILE_STATUSES = ("equal", "differs", "only_left", "only_right")
-
 
 def _tagged_compare(left: DataFrame, right: DataFrame, keys: list[str],
                     compare_cols: list[str] | None,

@@ -42,22 +42,6 @@ from ..config import (
 N_SALT = 16
 
 
-def alias_assignments(mentions: DataFrame) -> DataFrame:
-    """The reference's exact+alias canonicalization as a pure expression:
-    exact phase = identity on norm_term (graph_tools.py:32-91), alias phase =
-    the known-alias map (graph_tools.py:94-152). This is the canonicalization
-    the EMITTED TRIPLES use — the reference never fuzzy-merges, so edge parity
-    requires edges at this level; the LSH+CC fuzzy canonicalization feeds the
-    richer nodes table instead."""
-    from ..config import KNOWN_ALIASES
-
-    amap = F.create_map(*[F.lit(x) for kv in KNOWN_ALIASES.items() for x in kv])
-    return (
-        mentions.select("norm_term").distinct()
-        .withColumn("canon", F.coalesce(amap[F.col("norm_term")], F.col("norm_term")))
-    )
-
-
 def canonical_mentions(mentions: DataFrame, assignments: DataFrame) -> DataFrame:
     """Attach the canonical id to every mention. assignments is vocabulary-
     sized; Spark broadcasts it when small, AQE handles the rest."""

@@ -466,75 +466,3 @@ def temperature_weights(docs: DataFrame, budget_docs: int,
                      F.expr(f"((w_e6 * 1000000L) div _tot) * "
                             f"{int(budget_docs)}L div 1000000L")
                      .alias("planned_docs")))
-
-
-def interleave_manifest(docs: DataFrame, shard_size: int = 100,
-                        id_col: str = "doc_id", group_col: str = "source",
-                        seed: int = 42) -> DataFrame:
-    """Epoch-balanced training-order manifest: interleave every source's
-    documents into ONE deterministic global order such that each source is
-    spread uniformly across the epoch (all sources "finish together" —
-    single-epoch proportional mixing without replacement, the order a
-    multi-domain trainer actually reads).
-
-    Weighted-fair-queuing discipline, all integer: within each source,
-    documents are ranked by the portable md5 key (shuffled deterministically,
-    decorrelated from the split/sample keys by the 'mix' tag); document r of
-    a source with n docs gets virtual time vt = (r-1)·10¹² div n ∈ [0, 10¹²)
-    — the (r-1)·10¹² product runs in DECIMAL(38,0)/HUGEINT so ranks beyond
-    9.2M don't overflow a long. The global order is (vt, source, rank);
-    global_ix numbers it and shard assigns fixed-size output shards.
-
-    Scale shape: one window per source partition for the rank, a broadcast
-    of per-source counts, then ONE global sort (Spark range-partitions
-    global sorts, so no single-reducer bottleneck) — the same cost as
-    writing the ordered manifest at all.
-    """
-    if shard_size <= 0:
-        raise ValueError(f"shard_size must be positive, got {shard_size}")
-    rank_w = Window.partitionBy(group_col).orderBy(
-        _rank_hash(F.col(id_col), seed, "mix"), id_col)
-    ranked = docs.select(F.col(id_col).alias("doc_id"),
-                         F.col(group_col).alias("source")) \
-                 .withColumn("src_rank",
-                             F.row_number().over(rank_w).cast("long"))
-    sizes = ranked.groupBy("source").agg(F.count(F.lit(1)).alias("_n"))
-    vt = F.expr("CAST((CAST(src_rank - 1 AS DECIMAL(38,0)) * 1000000000000)"
-                " div _n AS BIGINT)")
-    ordered = (ranked.join(F.broadcast(sizes), "source")
-               .withColumn("vt_scaled", vt).drop("_n"))
-    gix = F.row_number().over(
-        Window.orderBy("vt_scaled", "source", "src_rank")).cast("long")
-    return (ordered.withColumn("global_ix", gix)
-            .withColumn("shard",
-                        F.expr(f"(global_ix - 1) div {int(shard_size)}L"))
-            .select("doc_id", "source", "src_rank", "vt_scaled",
-                    "global_ix", "shard"))
-
-
-def weighted_sample(docs: DataFrame, k: int, weight_col: str = "n_chars",
-                    key_col: str = "doc_id", seed: int = 42) -> DataFrame:
-    """Weighted sampling WITHOUT replacement (Efraimidis-Spirakis 2006):
-    each row draws u ~ U(0,1) and the k largest u^(1/w) win — computed in
-    log space as ln(u)/w (monotone-equivalent, overflow-free). u comes
-    from the first 52 md5 bits of f"wsample:{seed}:{key}" as
-    (H + 0.5)/2^52 — an EXACT double on every engine (H < 2^52, the
-    divisor a power of two), so the draw is reproducible across retries,
-    partitionings, and engines; no RNG state, unlike rand()-based
-    sampling which re-draws on task retry and breaks exactly-once
-    semantics at scale.
-
-    Scale shape: one map-side expression per row + a global top-k
-    (TakeOrderedAndProject — per-partition heaps of size k, never a full
-    sort), so a 100 TB corpus costs one scan and k rows of driver
-    traffic."""
-    H = F.conv(F.substring(F.md5(F.concat_ws(
-        ":", F.lit("wsample"), F.lit(str(seed)),
-        F.col(key_col).cast("string"))), 1, 13), 16, 10) \
-        .cast("decimal(20,0)").cast("double")
-    u = (H + F.lit(0.5)) / F.lit(float(1 << 52))
-    key = F.log(u) / F.col(weight_col).cast("double")
-    return (docs.filter(F.col(weight_col) > 0)
-            .select(key_col, weight_col, key.alias("es_key"))
-            .orderBy(F.col("es_key").desc(), key_col).limit(k)
-            .select(key_col, weight_col, F.round("es_key", 6).alias("es_key")))

@@ -5,20 +5,26 @@ value hash — so every column is aliased identically on both sides, doubles are
 made deterministic (decimal-exact sums, or same-order sequential folds) and
 then rounded, and every LIMIT has a total order.
 
-Sections:
-  relational  — scan/filter/agg/join/semi/anti/window/top-k/distinct (SURVEY §2.2-2.7)
-  kg          — the KG-construction semantics on the `documents` corpus
-                (co-occurrence formulas, category-pair typing — SURVEY §2.3-2.4)
-  dedup       — exact / n-gram-Jaccard / embedding-cosine (+ rows-only MinHash,
-                SimHash)
-  similarity  — brute-force ANN top-k (+ rows-only LSH variant)
-  text        — token/word stats, quality, fingerprints
-  pipeline    — the transcripts KG pipeline itself (rows-only: non-SQL ops)
+The registry holds the operators the KG system and its data pipeline use
+(SURVEY §2), each with one oracle. Query families, by name prefix:
+  q*          — relational scan/filter/agg/join/semi/anti/window/top-k/distinct
+                and the TPC-H shapes (SURVEY §2.2-2.7)
+  kg_*        — the KG-construction semantics on the `documents` corpus
+                (co-occurrence formulas, category-pair typing — SURVEY §2.3-2.4),
+                the graph analytics over it, and the transcripts KG pipeline
+                itself
+  dedup_*     — exact / n-gram-Jaccard / containment / edit-distance /
+                embedding-cosine / MinHash / SimHash near-duplicate detection
+  ann_*       — brute-force, LSH, IVF and PQ top-k, MMR, PCA, clustering
+  text_*, search_*, tfidf_*, bpe_* — token/word stats, quality, fingerprints,
+                retrieval, tokenization
+  sketch_*    — HLL/KMV/count-min/count-sketch/theta/bloom sketches
+  data_*      — LLM-data-pipeline operators (crawl, packing, sampling,
+                splits, curriculum)
+  multimodal_pdf_*, multimodal_doc_ingest — the PDF/EPUB document scan
 """
 
 from __future__ import annotations
-
-import math
 
 from collections.abc import Callable
 
@@ -2029,81 +2035,6 @@ except AttributeError:  # fixture generated before CHUNKS existed
     pass
 
 
-def _multimodal_sql(n: int = 96, seed: int = 42) -> str:
-    """Multimodal oracle: the synthetic payload is sha2-512 hex of
-    f"{seed}{id}" (sources/multimodal.synthetic_media) and the fake decode's
-    features are pure functions of those bytes — recomputed here in plain
-    Python (hashlib, no Spark) and served as VALUES. Verifies the
-    mapInPandas plumbing (binary batching, schema, image-row routing)
-    against an independent evaluation of the same spec."""
-    import hashlib
-
-    rows = []
-    for i in range(0, n, 3):  # kind == image ⇔ id % 3 == 0
-        payload = hashlib.sha512(f"{seed}{i}".encode()).hexdigest().encode()
-        w = 64 + (len(payload) % 1024)
-        h = 64 + (sum(payload[:16]) % 1024)
-        rows.append(f"({i}, {w}, {h}, {len(payload)})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(n_bytes AS BIGINT) AS n_bytes"
-            f" FROM (VALUES {', '.join(rows)}) t(media_id, width, height, n_bytes)")
-
-
-@register("multimodal_image_features", _multimodal_sql())
-def multimodal_image_features(spark, sf_dir):
-    from .sources.multimodal import extract_image_features, synthetic_media
-    return extract_image_features(synthetic_media(spark, 96)).select(
-        "media_id", "width", "height", "n_bytes")
-
-
-def _bmp_fixture_sql(n: int = 48, seed: int = 42) -> str:
-    """Oracle for the REAL BMP decode path: the synthetic image pixels are
-    pure formulas of (x, y, id) (sources/multimodal.synthetic_bmp_media), so
-    the expected channel means are recomputed here in plain Python — no
-    numpy, no BMP bytes — from the pattern directly. If the encoder or the
-    decoder corrupted a single pixel, the integer sums (and the hash) would
-    differ. Means are exact: integer sums divided once (both engines)."""
-    rows = []
-    for i in range(0, n, 3):  # kind == image ⇔ id % 3 == 0
-        w = 16 + (i * 5 + seed) % 17
-        h = 16 + (i * 7 + seed) % 13
-        rsum = gsum = bsum = 0
-        for y in range(h):
-            for x in range(w):
-                rsum += (x * 3 + y * 5 + i) % 256
-                gsum += (x + y * 2 + i * 11) % 256
-                bsum += (x * 7 + y + i * 3) % 256
-        npx = w * h
-        stride = (w * 3 + 3) & ~3          # BMP rows pad to 4 bytes
-        n_bytes = 14 + 40 + h * stride     # headers + pixel data
-        rows.append(f"({i}, {w}, {h}, {n_bytes}, {rsum / npx!r},"
-                    f" {gsum / npx!r}, {bsum / npx!r})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(n_bytes AS BIGINT) AS n_bytes,"
-            f" CAST(r_mean AS DOUBLE) AS r_mean,"
-            f" CAST(g_mean AS DOUBLE) AS g_mean,"
-            f" CAST(b_mean AS DOUBLE) AS b_mean"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, n_bytes, r_mean, g_mean, b_mean)")
-
-
-@register("multimodal_bmp_features", _bmp_fixture_sql())
-def multimodal_bmp_features(spark, sf_dir):
-    """REAL image decode end to end: genuine BMP bytes generated, parsed and
-    pixel-decoded inside mapInPandas (sources/multimodal.decode_bmp) — the
-    un-stubbed half of the multimodal component."""
-    from .sources.multimodal import (
-        extract_image_features_real,
-        synthetic_bmp_media,
-    )
-    return extract_image_features_real(synthetic_bmp_media(spark, 48)).select(
-        "media_id", "width", "height", "n_bytes", "r_mean", "g_mean", "b_mean")
-
-
 _CTX_SQL = """
 SELECT d.doc_id,
        CAST(len(string_split_regex(trim(d.text), '\\s+')) AS BIGINT) AS n_words
@@ -2787,57 +2718,6 @@ def q_embeddings_norm_stats(spark, sf_dir):
              F.round(F.min("nq") / F.lit(1e6), 6).alias("min_norm"),
              F.round(F.max("nq") / F.lit(1e6), 6).alias("max_norm"))
     )
-
-
-def _wav_fixture_sql(n: int = 48, seed: int = 42) -> str:
-    """Oracle for the REAL WAV/PCM decode path (the audio half of
-    synthetic_bmp_media): the synthetic tones are pure formulas of (id, t),
-    so the expected features are recomputed here in plain Python — stdlib
-    math only, no numpy, no WAV bytes (verified bit-identical to the numpy
-    synthesis: libm sin on float64 + truncate-toward-zero int16 cast).
-    Sample sums of squares are exact ints; rms/duration are single float
-    divisions — identical doubles in any engine, embedded via repr()."""
-    import math
-
-    rows = []
-    for i in range(1, n, 3):  # kind == audio ⇔ id % 3 == 1
-        rate = 8000
-        ns = 400 + (i % 5) * 80
-        freq = 200.0 + (i * 37 + seed) % 600
-        x = [int(math.sin(2 * math.pi * freq * t / rate) * 12000)
-             for t in range(ns)]
-        s2 = sum(v * v for v in x)
-        rms = math.sqrt(s2 / ns)
-        zc = sum(1 for a, b in zip(x[:-1], x[1:]) if (a < 0) != (b < 0))
-        rows.append(f"({i}, {rate}, {ns}, {ns / rate!r}, {rms!r}, {zc})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(sample_rate AS INTEGER) AS sample_rate,"
-            f" CAST(n_samples AS BIGINT) AS n_samples,"
-            f" CAST(duration_s AS DOUBLE) AS duration_s,"
-            f" CAST(rms AS DOUBLE) AS rms,"
-            f" CAST(zero_crossings AS BIGINT) AS zero_crossings"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, sample_rate, n_samples, duration_s, rms,"
-            f" zero_crossings)")
-
-
-@register("multimodal_wav_features", _wav_fixture_sql())
-def multimodal_wav_features(spark, sf_dir):
-    """REAL WAV/PCM audio decode in mapInPandas
-    (sources/multimodal.extract_audio_features): sample rate, duration, RMS,
-    zero crossings — the audio half of the multimodal component, against a
-    pure-Python re-derivation of the expected features."""
-    from .sources.multimodal import (
-        extract_audio_features,
-        synthetic_bmp_media,
-    )
-    out = extract_audio_features(synthetic_bmp_media(spark, 48))
-    return out.select("media_id",
-                      F.col("sample_rate").cast("int").alias("sample_rate"),
-                      F.col("n_samples").cast("long").alias("n_samples"),
-                      "duration_s", "rms",
-                      F.col("zero_crossings").cast("long")
-                      .alias("zero_crossings"))
 
 
 def _graph_stats_sql(min_cooc: int = 330) -> str:
@@ -4416,166 +4296,6 @@ def q_events_activity_streaks(spark, sf_dir):
                  .alias("best_start")))
 
 
-def _png_fixture_sql(n: int = 36, seed: int = 42) -> str:
-    """Oracle for the REAL PNG decode path: pixels are pure formulas of
-    (x, y, id) (sources/multimodal.synthetic_png_media), so the expected
-    channel means are recomputed here in plain Python with no PNG bytes —
-    if zlib round-trip, any of the five filters, or the RGBA slice
-    corrupted one pixel, the hash would differ."""
-    rows = []
-    for i in range(n):
-        w = 12 + (i * 3 + seed) % 9
-        h = 12 + (i * 5 + seed) % 7
-        rs = gs = bs = 0
-        for y in range(h):
-            for x in range(w):
-                rs += (x * 2 + y * 3 + i) % 256
-                gs += (x * 5 + y + i * 7) % 256
-                bs += (x + y * 7 + i * 13) % 256
-        npx = w * h
-        rows.append(f"({i}, {w}, {h}, {rs / npx!r}, {gs / npx!r},"
-                    f" {bs / npx!r})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(r_mean AS DOUBLE) AS r_mean,"
-            f" CAST(g_mean AS DOUBLE) AS g_mean,"
-            f" CAST(b_mean AS DOUBLE) AS b_mean"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, r_mean, g_mean, b_mean)")
-
-
-@register("multimodal_png_features", _png_fixture_sql())
-def multimodal_png_features(spark, sf_dir):
-    """REAL compressed-image decode end to end: genuine zlib-compressed
-    PNG bytes (RGB + RGBA, scanline filters cycling None/Sub/Up/Average/
-    Paeth) generated, parsed and unfiltered inside mapInPandas
-    (sources/multimodal.decode_png) — the former 'compressed codecs are
-    stubbed' inventory line no longer applies to PNG."""
-    from .sources.multimodal import (
-        extract_image_features_real,
-        synthetic_png_media,
-    )
-    return extract_image_features_real(synthetic_png_media(spark, 36)) \
-        .select("media_id", "width", "height",
-                "r_mean", "g_mean", "b_mean")
-
-
-def _gif_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the REAL GIF decode path: palette indices and the palette
-    itself are pure formulas (sources/multimodal.synthetic_gif_media /
-    _gif_palette), so expected channel means are recomputed in plain Python
-    without touching GIF bytes — a single wrong LZW code, palette entry or
-    scan order flips the hash."""
-    rows = []
-    for i in range(n):
-        w = 14 + (i * 3 + seed) % 11
-        h = 14 + (i * 5 + seed) % 9
-        rs = gs = bs = 0
-        for y in range(h):
-            for x in range(w):
-                p = (x * 11 + y * 17 + i * 29) % 256
-                rs += p
-                gs += (p * 7 + 31) % 256
-                bs += (p * 13 + 77) % 256
-        npx = w * h
-        rows.append(f"({i}, {w}, {h}, {rs / npx!r}, {gs / npx!r},"
-                    f" {bs / npx!r})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(r_mean AS DOUBLE) AS r_mean,"
-            f" CAST(g_mean AS DOUBLE) AS g_mean,"
-            f" CAST(b_mean AS DOUBLE) AS b_mean"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, r_mean, g_mean, b_mean)")
-
-
-@register("multimodal_gif_features", _gif_fixture_sql())
-def multimodal_gif_features(spark, sf_dir):
-    """REAL LZW-compressed GIF decode end to end inside mapInPandas
-    (sources/multimodal.decode_gif): variable-width LZW, palette lookup,
-    extension skipping — stdlib only."""
-    from .sources.multimodal import (
-        extract_image_features_real,
-        synthetic_gif_media,
-    )
-    return extract_image_features_real(synthetic_gif_media(spark, 30)) \
-        .select("media_id", "width", "height",
-                "r_mean", "g_mean", "b_mean")
-
-
-def _mp4_fixture_sql(n: int = 24, seed: int = 42) -> str:
-    """Oracle for the MP4 container parse: duration/timescale/tracks/codecs
-    are pure formulas (sources/multimodal.synthetic_mp4_media), recomputed
-    here without touching the box bytes."""
-    rows = []
-    for i in range(n):
-        dur = 30 + (i * 7 + seed) % 300
-        ts = (600, 1000, 90000)[i % 3]
-        codecs = [("avc1", "hev1", "av01")[(i + j) % 3]
-                  for j in range(1 + i % 2)]
-        rows.append(f"({i}, {float(dur)!r}, {ts}, {len(codecs)},"
-                    f" '{','.join(codecs)}')")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(duration_s AS DOUBLE) AS duration_s,"
-            f" CAST(timescale AS INTEGER) AS timescale,"
-            f" CAST(n_tracks AS INTEGER) AS n_tracks, codecs"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, duration_s, timescale, n_tracks, codecs)")
-
-
-@register("multimodal_mp4_metadata", _mp4_fixture_sql())
-def multimodal_mp4_metadata(spark, sf_dir):
-    """REAL video-container metadata extraction (sources/multimodal
-    .parse_mp4): genuine ISO-BMFF box trees walked inside mapInPandas —
-    duration, timescale, track count, codec fourccs; frame decode remains
-    honestly behind the ffmpeg stub."""
-    from .sources.multimodal import (
-        extract_video_metadata,
-        synthetic_mp4_media,
-    )
-    return extract_video_metadata(synthetic_mp4_media(spark, 24))
-
-
-def _jpeg_fixture_sql() -> str:
-    """JPEG oracle — DISCLOSURE: unlike PNG/GIF (lossless → means are pure
-    pixel formulas), JPEG is lossy, so the expected means come from a
-    single-process run of the same codec (scripts/gen_jpeg_fixture.py).
-    This pins the distributed mapInPandas plumbing and the decode's
-    determinism; the codec itself is independently pinned by
-    tests/test_jpeg_codec.py (DCT round trip, exact constant case, PSNR
-    floors, marker guards)."""
-    from .jpeg_fixture import JPEG_FEATURES
-    vals = ", ".join(
-        f"({i}, {w}, {h}, {r!r}, {g!r}, {b!r})"
-        for i, w, h, r, g, b in JPEG_FEATURES)
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(r_mean AS DOUBLE) AS r_mean,"
-            f" CAST(g_mean AS DOUBLE) AS g_mean,"
-            f" CAST(b_mean AS DOUBLE) AS b_mean"
-            f" FROM (VALUES {vals})"
-            f" t(media_id, width, height, r_mean, g_mean, b_mean)")
-
-
-@register("multimodal_jpeg_features", _jpeg_fixture_sql())
-def multimodal_jpeg_features(spark, sf_dir):
-    """REAL baseline JPEG decode end to end inside mapInPandas
-    (sources/jpeg.decode_jpeg — pure Python+numpy Huffman/DCT, 4:4:4,
-    4:2:0 and grayscale): genuine JFIF bytes with Annex-K tables and byte
-    stuffing. Oracle pins distributed == single-process (see
-    _jpeg_fixture_sql disclosure)."""
-    from .sources.multimodal import (
-        extract_image_features_real,
-        synthetic_jpeg_media,
-    )
-    return extract_image_features_real(synthetic_jpeg_media(spark, 24)) \
-        .select("media_id", "width", "height",
-                "r_mean", "g_mean", "b_mean")
-
-
 _DEDUP_EVAL_SQL = r"""
 WITH w AS (
   SELECT id, CAST(concat('0x', substr(md5(word), 1, 16)) AS UBIGINT) AS h
@@ -4861,70 +4581,6 @@ def q3_shipping_priority(spark, sf_dir):
     )
 
 
-_EVENTS_HISTOGRAM_SQL = """
-SELECT event_type, CAST(floor(value / 25.0) AS BIGINT) AS bin,
-       count(*) AS n,
-       round(min(value), 6) AS bin_min, round(max(value), 6) AS bin_max
-FROM events
-GROUP BY event_type, CAST(floor(value / 25.0) AS BIGINT)
-"""
-
-
-@register("q_events_histogram", _EVENTS_HISTOGRAM_SQL)
-def q_events_histogram(spark, sf_dir):
-    """Equi-width value histogram per event type — the profiling scan every
-    ingest QA pass runs. Binning is floor(value/width) on the SAME double
-    both engines hold, so bucket edges agree bit-for-bit."""
-    e = _t(spark, sf_dir, "events")
-    b = F.floor(F.col("value") / 25.0).cast("long")
-    return (e.groupBy("event_type", b.alias("bin"))
-            .agg(F.count(F.lit(1)).alias("n"),
-                 F.round(F.min("value"), 6).alias("bin_min"),
-                 F.round(F.max("value"), 6).alias("bin_max")))
-
-
-def _degree_histogram_sql() -> str:
-    return f"""
-WITH m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), deg AS (
-  SELECT term AS node, count(*) AS d FROM (
-    SELECT a AS term FROM e UNION ALL SELECT b FROM e
-  ) GROUP BY term
-)
-SELECT CAST(length(bin(d)) - 1 AS INTEGER) AS bucket,
-       count(*) AS n_nodes,
-       CAST(min(d) AS BIGINT) AS min_degree,
-       CAST(max(d) AS BIGINT) AS max_degree
-FROM deg GROUP BY 1
-"""
-
-
-@register("kg_degree_histogram_docs", _degree_histogram_sql())
-def kg_degree_histogram_docs(spark, sf_dir):
-    """Log2-bucketed degree distribution of the co-occurrence graph — the
-    one-page skew answer (how heavy is the Zipf head) that sizes salting
-    and partition budgets. Bucket = ⌊log₂(deg)⌋ computed INTEGER-exactly as
-    length(bin(deg))−1 (both engines' bin() drop leading zeros), never via
-    float log2."""
-    edges = _cooc_edges(spark, sf_dir)
-    und = edges.select(F.col("term_a").alias("node")).unionAll(
-        edges.select(F.col("term_b").alias("node")))
-    deg = und.groupBy("node").agg(F.count(F.lit(1)).alias("d"))
-    return deg.groupBy(
-        (F.length(F.bin("d")) - 1).cast("int").alias("bucket")).agg(
-        F.count(F.lit(1)).alias("n_nodes"),
-        F.min("d").cast("long").alias("min_degree"),
-        F.max("d").cast("long").alias("max_degree"))
-
-
 def _neighbor_jaccard_sql() -> str:
     return f"""
 WITH m AS MATERIALIZED (
@@ -4958,226 +4614,6 @@ def kg_neighbor_jaccard_docs(spark, sf_dir):
     from .operators.graph_algos import neighbor_jaccard
     edges = _cooc_edges(spark, sf_dir)
     return neighbor_jaccard(edges, src="term_a", dst="term_b")
-
-
-_VOCAB_COVERAGE_K = 100
-
-_OOV_RATE_SQL = f"""
-WITH words AS MATERIALIZED (
-  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS w
-  FROM documents
-), vocab AS (
-  SELECT w FROM (
-    SELECT w, row_number() OVER (ORDER BY count(*) DESC, w) AS rn
-    FROM words GROUP BY w
-  ) WHERE rn <= {_VOCAB_COVERAGE_K}
-)
-SELECT doc_id, count(*) AS n_tokens,
-       sum(CASE WHEN vocab.w IS NULL THEN 1 ELSE 0 END) AS n_oov,
-       round(sum(CASE WHEN vocab.w IS NULL THEN 1 ELSE 0 END)
-             / CAST(count(*) AS DOUBLE), 6) AS oov_rate
-FROM words LEFT JOIN vocab USING (w)
-GROUP BY doc_id
-"""
-
-
-@register("text_oov_rate", _OOV_RATE_SQL)
-def text_oov_rate(spark, sf_dir):
-    """Per-document OOV rate against the corpus' top-K most frequent words
-    (K=100, ties broken by word — a total order, so the vocabulary is
-    deterministic). The coverage QA every tokenizer/vocab decision needs:
-    docs with high OOV against the candidate vocabulary are the ones a
-    fixed-vocab model will shred. Vocabulary is corpus-derived (one count +
-    top-K), the scan joins against it broadcast."""
-    d = _t(spark, sf_dir, "documents")
-    words = d.select(
-        "doc_id",
-        F.explode(F.split(F.trim(F.lower("text")), r"\s+")).alias("w"))
-    wc = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-    wv = Window.orderBy(F.desc("cnt"), F.asc("w"))
-    vocab = (wc.withColumn("rn", F.row_number().over(wv))
-             .filter(F.col("rn") <= _VOCAB_COVERAGE_K)
-             .select("w", F.lit(True).alias("_in")))
-    return (
-        words.join(F.broadcast(vocab), "w", "left")
-        .groupBy("doc_id")
-        .agg(F.count(F.lit(1)).alias("n_tokens"),
-             F.sum(F.when(F.col("_in").isNull(), 1).otherwise(0))
-             .alias("n_oov"))
-        .select("doc_id", "n_tokens", "n_oov",
-                F.round(F.col("n_oov") / F.col("n_tokens").cast("double"), 6)
-                .alias("oov_rate"))
-    )
-
-
-_RFM_SQL = """
-WITH mx AS (SELECT max(ts) AS anchor FROM events),
-rfm AS (
-  SELECT user_id,
-         CAST(date_diff('second', max(ts), (SELECT anchor FROM mx)) AS BIGINT)
-           AS recency_s,
-         count(*) AS frequency,
-         round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 4)
-           AS monetary
-  FROM events GROUP BY user_id
-)
-SELECT user_id, recency_s, frequency, monetary,
-       CAST(ntile(4) OVER (ORDER BY recency_s, user_id) AS INTEGER) AS r_q,
-       CAST(ntile(4) OVER (ORDER BY frequency DESC, user_id) AS INTEGER) AS f_q,
-       CAST(ntile(4) OVER (ORDER BY monetary DESC, user_id) AS INTEGER) AS m_q
-FROM rfm
-"""
-
-
-@register("q_events_rfm", _RFM_SQL)
-def q_events_rfm(spark, sf_dir):
-    """RFM (recency / frequency / monetary) segmentation — one aggregate
-    per user then three ntile(4) windows, each with a user_id tie-break so
-    quartile assignment has a total order. Monetary is a decimal-exact sum;
-    recency is integer seconds from the corpus max ts (floored like
-    DuckDB's date_diff('second'))."""
-    e = _t(spark, sf_dir, "events")
-    anchor = e.agg(F.max("ts").alias("anchor"))
-    rfm = (
-        e.groupBy("user_id")
-        .agg(F.max("ts").alias("last_ts"),
-             F.count(F.lit(1)).alias("frequency"),
-             F.round(F.sum(F.col("value").cast("decimal(18,6)"))
-                     .cast("double"), 4).alias("monetary"))
-        .crossJoin(F.broadcast(anchor))
-        # DuckDB date_diff('second', a, b) counts whole-second boundaries:
-        # floor-difference of the epoch-second floors. ts is NTZ — cast to
-        # TIMESTAMP for unix_micros (session tz pinned UTC ⇒ == epoch µs)
-        .select("user_id",
-                (F.floor(F.unix_micros(F.col("anchor").cast("timestamp"))
-                         / 1_000_000)
-                 - F.floor(F.unix_micros(F.col("last_ts").cast("timestamp"))
-                           / 1_000_000))
-                .cast("long").alias("recency_s"),
-                "frequency", "monetary"))
-    return rfm.select(
-        "user_id", "recency_s", "frequency", "monetary",
-        F.ntile(4).over(Window.orderBy(F.asc("recency_s"), F.asc("user_id")))
-        .cast("int").alias("r_q"),
-        F.ntile(4).over(Window.orderBy(F.desc("frequency"), F.asc("user_id")))
-        .cast("int").alias("f_q"),
-        F.ntile(4).over(Window.orderBy(F.desc("monetary"), F.asc("user_id")))
-        .cast("int").alias("m_q"))
-
-
-_EWMA_ALPHA_NUM, _EWMA_ALPHA_DEN = 1, 4  # alpha = 1/4 as an exact rational
-
-
-_EWMA_SQL = """
-WITH RECURSIVE seq AS MATERIALIZED (
-  SELECT user_id,
-         CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS v,
-         row_number() OVER (PARTITION BY user_id ORDER BY ts, event_id) AS rn
-  FROM events
-),
-rec AS (
-  SELECT user_id, rn, v, v AS s FROM seq WHERE rn = 1
-  UNION ALL
-  SELECT seq.user_id, seq.rn, seq.v, (3 * rec.s + seq.v) // 4
-  FROM rec JOIN seq ON seq.user_id = rec.user_id AND seq.rn = rec.rn + 1
-)
-SELECT user_id, CAST(max(rn) AS BIGINT) AS n_events,
-       CAST(max_by(s, rn) AS BIGINT) AS ewma_scaled
-FROM rec GROUP BY user_id
-"""
-
-
-@register("q_events_ewma", _EWMA_SQL)
-def q_events_ewma(spark, sf_dir):
-    """Per-user exponentially-weighted moving average of event values — the
-    streaming-metric primitive (smoothed rate / anomaly baseline) as an
-    EXACT integer recurrence: values fixed-point-scaled to ×10⁶ longs,
-    s₁ = v₁, sₜ = (3·sₜ₋₁ + vₜ) >> 2 (α = 1/4 as a rational; shift = floor
-    division on non-negative longs). A float EWMA is order-sensitive and
-    engine-divergent; the integer recurrence is bit-identical anywhere —
-    Spark folds it with F.aggregate over the (ts, event_id)-sorted array
-    (linear recurrence ⇒ sequential fold IS the definition; same recipe as
-    pack_sequences), DuckDB replays it with a recursive CTE."""
-    e = _t(spark, sf_dir, "events")
-    v = F.floor(F.col("value") * 1_000_000 + F.lit(0.5)).cast("long")
-    seq = e.select("user_id", F.struct("ts", "event_id", v.alias("v")).alias("it"))
-    per_user = seq.groupBy("user_id").agg(
-        F.array_sort(F.collect_list("it")).alias("its"))
-    vs = F.transform(F.col("its"), lambda x: x["v"])
-    fold = F.aggregate(
-        F.slice(vs, 2, F.greatest(F.size(vs) - 1, F.lit(0))),
-        F.element_at(vs, 1),
-        lambda acc, x: F.shiftright(acc * 3 + x, 2))
-    return per_user.select(
-        "user_id", F.size("its").cast("long").alias("n_events"),
-        fold.cast("long").alias("ewma_scaled"))
-
-
-_BIGRAM_LM_SQL = """
-WITH words AS MATERIALIZED (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS ws
-  FROM documents
-), bi AS MATERIALIZED (
-  SELECT z[1] AS w1, z[2] AS w2
-  FROM (SELECT unnest(list_zip(ws, ws[2:])) AS z FROM words)
-  WHERE z[2] IS NOT NULL
-), c12 AS (SELECT w1, w2, count(*) AS c FROM bi GROUP BY w1, w2),
-c1 AS (SELECT w1, count(*) AS c FROM bi GROUP BY w1),
-v AS (SELECT count(DISTINCT w) AS n FROM (
-  SELECT w1 AS w FROM bi UNION SELECT w2 FROM bi))
-SELECT c12.w1, c12.w2, CAST(c12.c AS BIGINT) AS c_bigram,
-       round((c12.c + 1) / CAST(c1.c + v.n AS DOUBLE), 6) AS p_smooth
-FROM c12 JOIN c1 ON c12.w1 = c1.w1 CROSS JOIN v
-"""
-
-
-@register("text_bigram_lm", _BIGRAM_LM_SQL)
-def text_bigram_lm(spark, sf_dir):
-    """Add-one-smoothed bigram language-model counts over the corpus —
-    P(w₂|w₁) = (c(w₁,w₂)+1)/(c(w₁·)+V) as an exact integer ratio (V =
-    distinct vocabulary over bigram positions), the data-side half of a
-    perplexity/quality filter. Bigrams explode from one zip of the word
-    array with its own tail (no window shuffle)."""
-    d = _t(spark, sf_dir, "documents")
-    ws = F.split(F.trim(F.lower("text")), r"\s+")
-    bi = (
-        d.select(ws.alias("ws"))
-        .select(F.explode(F.zip_with(
-            F.slice("ws", 1, F.greatest(F.size("ws") - 1, F.lit(0))),
-            F.slice("ws", 2, F.greatest(F.size("ws") - 1, F.lit(0))),
-            lambda a, b: F.struct(a.alias("w1"), b.alias("w2")))).alias("p"))
-        .select("p.w1", "p.w2")
-    ).persist()
-    c12 = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c_bigram"))
-    c1 = bi.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    vocab_n = (bi.select(F.col("w1").alias("w"))
-               .union(bi.select(F.col("w2").alias("w")))
-               .distinct().agg(F.count(F.lit(1)).alias("v")))
-    return (
-        c12.join(c1, "w1").crossJoin(F.broadcast(vocab_n))
-        .select("w1", "w2", F.col("c_bigram").cast("long").alias("c_bigram"),
-                F.round((F.col("c_bigram") + 1)
-                        / (F.col("c1") + F.col("v")).cast("double"), 6)
-                .alias("p_smooth"))
-    )
-
-
-_ECDF_SQL = """
-SELECT event_id, value,
-       round(percent_rank() OVER (ORDER BY value, event_id), 6) AS ecdf
-FROM events
-"""
-
-
-@register("q_events_value_ecdf", _ECDF_SQL)
-def q_events_value_ecdf(spark, sf_dir):
-    """Empirical CDF of the value column — percent_rank over a TOTAL order
-    ((value, event_id): event_id unique ⇒ rank has no tie ambiguity), the
-    calibration primitive behind normalization and outlier thresholds."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.orderBy(F.asc("value"), F.asc("event_id"))
-    return e.select("event_id", "value",
-                    F.round(F.percent_rank().over(w), 6).alias("ecdf"))
 
 
 def _mmr_sql(k: int = 5, pool: int = 20) -> str:
@@ -5309,85 +4745,6 @@ def kg_betweenness_docs(spark, sf_dir):
                                   .withColumnRenamed("term_b", "obj"))
 
 
-_KNN_GRAPH_SQL = """
-WITH v AS (SELECT vec_id AS id, embedding::DOUBLE[] AS v FROM embeddings),
-scored AS (
-  SELECT a.id, b.id AS nbr,
-         round(list_dot_product(b.v, a.v)
-               / (sqrt(list_dot_product(b.v, b.v))
-                  * sqrt(list_dot_product(a.v, a.v))), 6) AS cos
-  FROM v a JOIN v b ON a.id <> b.id
-)
-SELECT id, nbr, cos, CAST(rank AS BIGINT) AS rank
-FROM (SELECT *, row_number() OVER (PARTITION BY id
-                                   ORDER BY cos DESC, nbr ASC) AS rank
-      FROM scored)
-WHERE rank <= 5
-"""
-
-
-@register("ann_knn_graph", _KNN_GRAPH_SQL)
-def ann_knn_graph(spark, sf_dir):
-    """k-NN graph construction (k=5 cosine neighbors per CORPUS row) — the
-    substrate of graph-based ANN serving (HNSW/NSG), KNN clustering and
-    label propagation over embeddings. Brute pairing is the gate-scale
-    correctness baseline; at 10⁹ rows candidate generation swaps to the
-    LSH/IVF bucket joins (same top-k tail, see similarity.py)."""
-    from .operators.similarity import brute_force_topk
-    embs = _t(spark, sf_dir, "embeddings")
-    return brute_force_topk(embs, embs, k=5) \
-        .select(F.col("query_id").alias("id"), F.col("id").alias("nbr"),
-                "cos", "rank")
-
-
-def _tiff_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the REAL TIFF decode path: pixels are pure formulas of
-    (x, y, id) (sources/multimodal.synthetic_tiff_media), so expected
-    channel means recompute here with no TIFF bytes — a wrong strip
-    boundary, inline-vs-pointer value read or endianness slip flips the
-    hash."""
-    rows = []
-    for i in range(n):
-        w = 13 + (i * 3 + seed) % 10
-        h = 11 + (i * 5 + seed) % 8
-        rs = gs = bs = 0
-        for y in range(h):
-            for x in range(w):
-                if i % 5 == 4:
-                    p = (x * 9 + y * 4 + i * 5) % 256
-                    rs += p; gs += p; bs += p
-                else:
-                    rs += (x * 2 + y * 3 + i) % 256
-                    gs += (x * 5 + y + i * 7) % 256
-                    bs += (x + y * 7 + i * 13) % 256
-        npx = w * h
-        rows.append(f"({i}, {w}, {h}, {rs / npx!r}, {gs / npx!r},"
-                    f" {bs / npx!r})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(r_mean AS DOUBLE) AS r_mean,"
-            f" CAST(g_mean AS DOUBLE) AS g_mean,"
-            f" CAST(b_mean AS DOUBLE) AS b_mean"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, r_mean, g_mean, b_mean)")
-
-
-@register("multimodal_tiff_features", _tiff_fixture_sql())
-def multimodal_tiff_features(spark, sf_dir):
-    """REAL strip-TIFF decode end to end inside mapInPandas
-    (sources/multimodal.decode_tiff): IFD walk with inline-vs-pointer
-    values, both byte orders, multi-strip assembly, RGB + grayscale —
-    stdlib struct + numpy only; compressed/tiled TIFFs honestly refuse."""
-    from .sources.multimodal import (
-        extract_image_features_real,
-        synthetic_tiff_media,
-    )
-    return extract_image_features_real(synthetic_tiff_media(spark, 30)) \
-        .select("media_id", "width", "height",
-                "r_mean", "g_mean", "b_mean")
-
-
 _Q6_SQL = """
 SELECT round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
                      * CAST(l_discount AS DECIMAL(18,4))) AS DOUBLE), 2)
@@ -5419,154 +4776,6 @@ def q6_forecast_revenue(spark, sf_dir):
              .alias("revenue_effect"),
              F.count(F.lit(1)).alias("n_lines"))
     )
-
-
-_ASSOC_RULES_SQL = """
-WITH ut AS MATERIALIZED (
-  SELECT DISTINCT user_id, event_type FROM events
-), n1 AS (SELECT event_type, count(*) AS c FROM ut GROUP BY event_type),
-pairs AS (
-  SELECT a.event_type AS ante, b.event_type AS cons, count(*) AS c_ab
-  FROM ut a JOIN ut b ON a.user_id = b.user_id
-                     AND a.event_type <> b.event_type
-  GROUP BY a.event_type, b.event_type
-), nu AS (SELECT count(DISTINCT user_id) AS n FROM ut)
-SELECT ante, cons, CAST(c_ab AS BIGINT) AS support_users,
-       CAST((c_ab * 1000000) // na.c AS BIGINT) AS confidence_e6,
-       CAST((c_ab * nu.n * 1000000) // (na.c * nc.c) AS BIGINT) AS lift_e6
-FROM pairs
-JOIN n1 na ON na.event_type = ante
-JOIN n1 nc ON nc.event_type = cons
-CROSS JOIN nu
-"""
-
-
-@register("q_events_assoc_rules", _ASSOC_RULES_SQL)
-def q_events_assoc_rules(spark, sf_dir):
-    """Market-basket association rules over (user, event_type) baskets:
-    directed support / confidence / lift, every metric an exact integer
-    (×10⁶ floor divisions — same discipline as text_collocations, no ln).
-    The distinct-pair self-join keys on user_id (bounded baskets)."""
-    e = _t(spark, sf_dir, "events")
-    ut = e.select("user_id", "event_type").distinct().persist()
-    n1 = ut.groupBy("event_type").agg(F.count(F.lit(1)).alias("c"))
-    nu = ut.select("user_id").distinct().agg(
-        F.count(F.lit(1)).alias("n"))
-    a = ut.select("user_id", F.col("event_type").alias("ante"))
-    b = ut.select("user_id", F.col("event_type").alias("cons"))
-    pairs = (a.join(b, "user_id")
-             .filter(F.col("ante") != F.col("cons"))
-             .groupBy("ante", "cons").agg(F.count(F.lit(1)).alias("c_ab")))
-    return (
-        pairs
-        .join(F.broadcast(n1.select(F.col("event_type").alias("ante"),
-                                    F.col("c").alias("ca"))), "ante")
-        .join(F.broadcast(n1.select(F.col("event_type").alias("cons"),
-                                    F.col("c").alias("cc"))), "cons")
-        .crossJoin(F.broadcast(nu))
-        .select("ante", "cons",
-                F.col("c_ab").cast("long").alias("support_users"),
-                F.expr("(c_ab * 1000000L) div ca").alias("confidence_e6"),
-                F.expr("(c_ab * n * 1000000L) div (ca * cc)").alias("lift_e6"))
-    )
-
-
-_DUP_RATE_SQL = """
-WITH g AS (
-  SELECT source, md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
-  FROM documents
-), grp AS (
-  SELECT source, fp, count(*) AS sz FROM g GROUP BY source, fp
-)
-SELECT source, CAST(sum(sz) AS BIGINT) AS n_docs,
-       CAST(sum(CASE WHEN sz > 1 THEN 1 ELSE 0 END) AS BIGINT) AS dup_groups,
-       CAST(sum(sz - 1) AS BIGINT) AS redundant_docs,
-       round(sum(sz - 1) / CAST(sum(sz) AS DOUBLE), 6) AS dup_rate
-FROM grp GROUP BY source
-"""
-
-
-@register("dedup_rate_report", _DUP_RATE_SQL)
-def dedup_rate_report(spark, sf_dir):
-    """Per-source exact-duplication health report — the rollup every dedup
-    pass publishes: docs, duplicate groups, redundant rows, dup rate. Same
-    normalization+md5 fingerprint as dedup_exact_docs, aggregated twice
-    (full-key then source) so the hot fingerprints never funnel."""
-    from .functions.text import normalize_term
-    d = _t(spark, sf_dir, "documents")
-    grp = (d.withColumn("fp", F.md5(normalize_term(F.col("text"))))
-           .groupBy("source", "fp").agg(F.count(F.lit(1)).alias("sz")))
-    return (grp.groupBy("source")
-            .agg(F.sum("sz").cast("long").alias("n_docs"),
-                 F.sum(F.when(F.col("sz") > 1, 1).otherwise(0))
-                 .cast("long").alias("dup_groups"),
-                 F.sum(F.col("sz") - 1).cast("long").alias("redundant_docs"),
-                 F.round(F.sum(F.col("sz") - 1)
-                         / F.sum("sz").cast("double"), 6).alias("dup_rate")))
-
-
-_DWELL_SQL = """
-WITH g AS (
-  SELECT user_id,
-         epoch_us(ts) - lag(epoch_us(ts))
-           OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-  FROM events
-)
-SELECT user_id, CAST(count(gap_us) AS BIGINT) AS n_gaps,
-       CAST(min(gap_us) AS BIGINT) AS min_gap_us,
-       CAST(max(gap_us) AS BIGINT) AS max_gap_us,
-       CAST(sum(gap_us) // count(gap_us) AS BIGINT) AS mean_gap_us
-FROM g WHERE gap_us IS NOT NULL
-GROUP BY user_id
-"""
-
-
-@register("q_events_dwell_gaps", _DWELL_SQL)
-def q_events_dwell_gaps(spark, sf_dir):
-    """Inter-event dwell-time profile per user: integer-µs gaps from one
-    lag window (total order (ts, event_id)), aggregated with exact integer
-    min/max/floored mean — engagement pacing without float time math."""
-    e = _t(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    g = e.select("user_id",
-                 (us - F.lag(us).over(w)).alias("gap_us")) \
-         .filter(F.col("gap_us").isNotNull())
-    return (g.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n_gaps"),
-                 F.min("gap_us").cast("long").alias("min_gap_us"),
-                 F.max("gap_us").cast("long").alias("max_gap_us"),
-                 F.expr("sum(gap_us) div count(gap_us)")
-                 .alias("mean_gap_us")))
-
-
-_BURSTS_SQL = """
-WITH w AS (
-  SELECT user_id, event_id,
-         count(*) OVER (PARTITION BY user_id ORDER BY epoch_us(ts)
-                        RANGE BETWEEN 60000000 PRECEDING AND CURRENT ROW)
-           AS n_in_minute
-  FROM events
-)
-SELECT user_id, CAST(max(n_in_minute) AS BIGINT) AS peak_events_per_minute
-FROM w GROUP BY user_id
-"""
-
-
-@register("q_events_bursts", _BURSTS_SQL)
-def q_events_bursts(spark, sf_dir):
-    """Peak burst rate: the most events any trailing 60-second window holds
-    per user — a RANGE frame over integer epoch-µs (never float seconds),
-    then one max. The rate-limiter / abuse-detection primitive."""
-    e = _t(spark, sf_dir, "events")
-    us = F.unix_micros(F.col("ts").cast("timestamp"))
-    w = (Window.partitionBy("user_id").orderBy(us.alias("us"))
-         .rangeBetween(-60_000_000, 0))
-    return (e.select("user_id",
-                     F.count(F.lit(1)).over(w).alias("n_in_minute"))
-            .groupBy("user_id")
-            .agg(F.max("n_in_minute").cast("long")
-                 .alias("peak_events_per_minute")))
 
 
 _Q10_SQL = """
@@ -5724,194 +4933,6 @@ def kg_simrank_docs(spark, sf_dir):
     edges = _cooc_edges(spark, sf_dir, 322)
     return simrank(edges.withColumnRenamed("term_a", "subj")
                    .withColumnRenamed("term_b", "obj"))
-
-
-_ANN_RANGE_SQL = """
-WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-           FROM embeddings WHERE vec_id IN (0, 1, 2, 3, 4)),
-scored AS (
-  SELECT q.query_id, a.vec_id AS id,
-         round(list_dot_product(a.embedding::DOUBLE[], q.qv)
-               / (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[]))
-                  * sqrt(list_dot_product(q.qv, q.qv))), 6) AS cos
-  FROM embeddings a, q WHERE a.vec_id != q.query_id
-)
-SELECT query_id, id, cos FROM scored WHERE cos >= 0.2
-"""
-
-
-@register("ann_range_search", _ANN_RANGE_SQL)
-def ann_range_search(spark, sf_dir):
-    """Range (radius) similarity search — ALL corpus rows within cosine ≥ τ
-    of each query, the other half of the ANN API surface (top-k returns a
-    fixed count; range returns a fixed quality bar — the dedup/recall-audit
-    primitive). Brute scoring at gate scale; the banded/IVF candidate
-    generation applies unchanged at 10⁹ rows. No top-k window: a radius
-    query is a pure filter after scoring — nothing to sort."""
-    from .functions.vectors import cosine
-    embs = _t(spark, sf_dir, "embeddings")
-    q = embs.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").cast("array<double>").alias("qv"))
-    c = embs.select(F.col("vec_id").alias("id"),
-                    F.col("embedding").cast("array<double>").alias("v"))
-    return (c.crossJoin(F.broadcast(q))
-            .filter(F.col("id") != F.col("query_id"))
-            .select("query_id", "id",
-                    F.round(cosine(F.col("v"), F.col("qv")), 6).alias("cos"))
-            .filter(F.col("cos") >= 0.2))
-
-
-def _metapath_sql() -> str:
-    return f"""
-WITH m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e0 AS MATERIALIZED (
-  SELECT a.term AS term_a, b.term AS term_b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term HAVING count(*) >= 2
-), te AS MATERIALIZED (
-  SELECT e.term_a, typ.pred, e.term_b
-  FROM e0 e JOIN {kg_docs.typing_values_sql()}
-    ON typ.term_a = e.term_a AND typ.term_b = e.term_b
-), und AS MATERIALIZED (
-  SELECT term_a AS src, pred, term_b AS dst FROM te
-  UNION ALL SELECT term_b, pred, term_a FROM te
-)
-SELECT x.pred AS pred_1, y.pred AS pred_2, count(*) AS n_paths
-FROM und x JOIN und y ON y.src = x.dst AND y.dst <> x.src
-GROUP BY x.pred, y.pred
-"""
-
-
-@register("kg_metapath_counts_docs", _metapath_sql())
-def kg_metapath_counts_docs(spark, sf_dir):
-    """Typed 2-hop metapath census — how many (pred₁, pred₂) paths the KG
-    holds (x —pred₁— m —pred₂— y, x ≠ y) — the schema-level profile that
-    drives metapath2vec-style sampling budgets and relation co-occurrence
-    QA. One self-join of the undirected typed edge list on the middle
-    node."""
-    te = _typed_edges(spark, sf_dir)
-    und = te.select(F.col("term_a").alias("src"), "pred",
-                    F.col("term_b").alias("dst")) \
-        .unionAll(te.select(F.col("term_b").alias("src"), "pred",
-                            F.col("term_a").alias("dst")))
-    x = und.select(F.col("src").alias("x"), F.col("pred").alias("pred_1"),
-                   F.col("dst").alias("mid"))
-    y = und.select(F.col("src").alias("mid"), F.col("pred").alias("pred_2"),
-                   F.col("dst").alias("y"))
-    return (x.join(y, "mid")
-            .filter(F.col("y") != F.col("x"))
-            .groupBy("pred_1", "pred_2")
-            .agg(F.count(F.lit(1)).alias("n_paths")))
-
-
-_PPS_SAMPLE_K = 40
-
-_PPS_SAMPLE_SQL = f"""
-WITH w AS (
-  SELECT doc_id, n_chars,
-         sum(n_chars) OVER (ORDER BY doc_id
-                            ROWS UNBOUNDED PRECEDING) AS cum,
-         sum(n_chars) OVER () AS total
-  FROM documents
-)
-SELECT doc_id, CAST(n_chars AS BIGINT) AS weight,
-       CAST(((cum - 1) * {_PPS_SAMPLE_K}) // total AS BIGINT) AS stratum
-FROM w
-WHERE (cum - 1) * {_PPS_SAMPLE_K} // total
-      > (cum - n_chars - 1) * {_PPS_SAMPLE_K} // total
-   OR cum = n_chars
-"""
-
-
-@register("data_pps_sample", _PPS_SAMPLE_SQL)
-def data_pps_sample(spark, sf_dir):
-    """Systematic probability-proportional-to-size sampling: lay documents
-    on a line of cumulative weight (n_chars, doc_id order), cut it into K
-    equal strata, keep each document whose weight span first crosses a
-    stratum boundary — big documents are near-certain picks, small ones
-    sampled ∝ weight, and EVERYTHING is integer arithmetic (the stratum of
-    a cumulative position is (pos·K) DIV total), so the sample is
-    deterministic and growth-stable. The weighted counterpart of
-    data_hash_split for mixture construction. The prefix sum is one window
-    over the doc_id total order (at 10⁹ docs: two-phase per-partition
-    sums + a 16-row boundary stitch, the domain-budget pattern)."""
-    d = _t(spark, sf_dir, "documents")
-    w = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
-    k = F.lit(_PPS_SAMPLE_K)
-    cum = F.sum("n_chars").over(w)
-    total = F.sum("n_chars").over(
-        Window.partitionBy().rowsBetween(Window.unboundedPreceding,
-                                         Window.unboundedFollowing))
-    x = d.select("doc_id", "n_chars", cum.alias("cum"), total.alias("total"))
-    stratum = F.expr(f"((cum - 1) * {_PPS_SAMPLE_K}) div total")
-    prev_stratum = F.expr(f"((cum - n_chars - 1) * {_PPS_SAMPLE_K}) div total")
-    return (x.filter((stratum > prev_stratum) | (F.col("cum") == F.col("n_chars")))
-            .select("doc_id", F.col("n_chars").cast("long").alias("weight"),
-                    stratum.cast("long").alias("stratum")))
-
-
-_AUTOCORR_SQL = """
-WITH s AS (
-  SELECT user_id,
-         CAST(floor(value * 1000000 + 0.5) AS BIGINT) AS v,
-         lead(CAST(floor(value * 1000000 + 0.5) AS BIGINT))
-           OVER (PARTITION BY user_id ORDER BY ts, event_id) AS vn
-  FROM events
-), p AS (
-  SELECT user_id,
-         count(vn) AS n,
-         sum(CASE WHEN vn IS NOT NULL THEN v ELSE 0 END)::DECIMAL(38,0) AS sx,
-         sum(vn)::DECIMAL(38,0) AS sy,
-         sum(CASE WHEN vn IS NOT NULL THEN v*v ELSE 0 END)::DECIMAL(38,0) AS sxx,
-         sum(vn*vn)::DECIMAL(38,0) AS syy,
-         sum(v * vn)::DECIMAL(38,0) AS sxy
-  FROM s GROUP BY user_id
-)
-SELECT user_id, CAST(n AS BIGINT) AS n_pairs,
-       round(CAST(n * sxy - sx * sy AS DOUBLE)
-             / (sqrt(CAST(n * sxx - sx * sx AS DOUBLE))
-                * sqrt(CAST(n * syy - sy * sy AS DOUBLE))), 6) AS autocorr_lag1
-FROM p
-WHERE n >= 2 AND n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0
-"""
-
-
-@register("q_events_autocorr", _AUTOCORR_SQL)
-def q_events_autocorr(spark, sf_dir):
-    """Lag-1 autocorrelation of event values per user — is behavior sticky
-    or mean-reverting. The zscore recipe generalized to bivariate moments:
-    values fixed-point-scaled to ×10⁶ longs, all five moment sums exact
-    DECIMAL(38,0) (order-free), ONE float expression at the end (Pearson on
-    exact integers — both engines evaluate the identical doubles)."""
-    e = _t(spark, sf_dir, "events")
-    v = F.floor(F.col("value") * 1_000_000 + F.lit(0.5)).cast("long")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    dec = "decimal(38,0)"
-    p = (e.select("user_id", v.alias("v"),
-                  F.lead(v).over(w).alias("vn"))
-         .groupBy("user_id")
-         .agg(F.count("vn").alias("n"),
-              F.sum(F.when(F.col("vn").isNotNull(), F.col("v"))
-                    .otherwise(0).cast(dec)).alias("sx"),
-              F.sum(F.col("vn").cast(dec)).alias("sy"),
-              F.sum(F.when(F.col("vn").isNotNull(),
-                           F.col("v") * F.col("v"))
-                    .otherwise(0).cast(dec)).alias("sxx"),
-              F.sum((F.col("vn") * F.col("vn")).cast(dec)).alias("syy"),
-              F.sum((F.col("v") * F.col("vn")).cast(dec)).alias("sxy")))
-    varx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    cov = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    return (p.filter((F.col("n") >= 2) & (varx > 0) & (vary > 0))
-            .select("user_id", F.col("n").cast("long").alias("n_pairs"),
-                    F.round(cov.cast("double")
-                            / (F.sqrt(varx.cast("double"))
-                               * F.sqrt(vary.cast("double"))), 6)
-                    .alias("autocorr_lag1")))
 
 
 _Q13_SQL = """
@@ -6355,42 +5376,6 @@ def q8_market_share(spark, sf_dir):
         .agg(F.round(F.sum(num).cast("double")
                      / F.sum(rev).cast("double"), 6).alias("mkt_share"))
         .orderBy("o_year"))
-
-
-_MIX_SQL = """
-WITH r AS (
-  SELECT doc_id, source,
-         CAST(row_number() OVER (
-           PARTITION BY source
-           ORDER BY md5(concat('mix:42:', CAST(doc_id AS VARCHAR))), doc_id)
-         AS BIGINT) AS src_rank
-  FROM documents
-), n AS (SELECT source, count(*) AS n FROM documents GROUP BY source),
-v AS (
-  SELECT doc_id, r.source AS source, src_rank,
-         CAST((CAST(src_rank - 1 AS HUGEINT) * 1000000000000) // n.n
-              AS BIGINT) AS vt_scaled
-  FROM r JOIN n ON r.source = n.source
-)
-SELECT doc_id, source, src_rank, vt_scaled,
-       CAST(row_number() OVER (ORDER BY vt_scaled, source, src_rank)
-            AS BIGINT) AS global_ix,
-       CAST((row_number() OVER (ORDER BY vt_scaled, source, src_rank) - 1)
-            // 100 AS BIGINT) AS shard
-FROM v
-"""
-
-
-@register("data_mix_interleave", _MIX_SQL)
-def data_mix_interleave(spark, sf_dir):
-    """Epoch-balanced data-mixing manifest: every source's documents
-    deterministically shuffled (md5 'mix' tag) and interleaved by integer
-    weighted-fair-queuing virtual time so each source spreads uniformly
-    over the epoch, then cut into 100-doc training shards — the global
-    read order a multi-domain trainer consumes."""
-    from .operators.text_analysis import interleave_manifest
-    return interleave_manifest(_t(spark, sf_dir, "documents"),
-                               shard_size=100)
 
 
 # ──────────────── TPC-H shapes, wave 6 (no-partsupp adaptations) ────────────────
@@ -6885,71 +5870,6 @@ def _mention_order_edges(spark, sf_dir):
     return _memo(spark, ("mention_order_edges", sf_dir), build)
 
 
-_DOC_LM_SCORE_SQL = """
-WITH words AS MATERIALIZED (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS ws
-  FROM documents
-), bi AS MATERIALIZED (
-  SELECT doc_id, z[1] AS w1, z[2] AS w2
-  FROM (SELECT doc_id, unnest(list_zip(ws, ws[2:])) AS z FROM words)
-  WHERE z[2] IS NOT NULL
-), c12 AS (SELECT w1, w2, count(*) AS c FROM bi GROUP BY w1, w2),
-c1 AS (SELECT w1, count(*) AS c FROM bi GROUP BY w1),
-v AS (SELECT count(DISTINCT w) AS n FROM (
-  SELECT w1 AS w FROM bi UNION SELECT w2 FROM bi))
-SELECT bi.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       CAST(sum((c12.c + 1) * 1000000000 // (c1.c + v.n)) AS BIGINT)
-         AS sum_score_e9,
-       CAST(sum((c12.c + 1) * 1000000000 // (c1.c + v.n)) // count(*)
-            AS BIGINT) AS avg_score_e9
-FROM bi JOIN c12 ON bi.w1 = c12.w1 AND bi.w2 = c12.w2
-JOIN c1 ON bi.w1 = c1.w1 CROSS JOIN v
-GROUP BY bi.doc_id
-ORDER BY doc_id
-"""
-
-
-@register("text_doc_lm_score", _DOC_LM_SCORE_SQL)
-def text_doc_lm_score(spark, sf_dir):
-    """Per-document likelihood score under the corpus's own add-one
-    bigram LM — the quality/perplexity-filter primitive that ranks
-    documents by how typical their word transitions are. Each bigram earns
-    the integer fixed-point score ⌊(c(w₁,w₂)+1)·10⁹ / (c(w₁·)+V)⌋ (the
-    smoothed probability ×10⁹, floored BEFORE summing so every engine adds
-    the same longs); a document's score is the exact sum and floored mean.
-    Scale shape: the bigram-count tables are vocabulary²-bounded, so the
-    score join is an equi-join against a dimension that a real corpus
-    broadcasts or bucket-joins; the per-doc rollup is one map-side-
-    combinable aggregate on doc_id. Overflow: c·10⁹ stays under 2⁶³ up to
-    ~9·10⁹ occurrences of a single bigram — beyond that, move the product
-    to decimal(38,0)."""
-    d = _t(spark, sf_dir, "documents")
-    ws = F.split(F.trim(F.lower("text")), r"\s+")
-    bi = (
-        d.select("doc_id", ws.alias("ws"))
-        .select("doc_id", F.explode(F.zip_with(
-            F.slice("ws", 1, F.greatest(F.size("ws") - 1, F.lit(0))),
-            F.slice("ws", 2, F.greatest(F.size("ws") - 1, F.lit(0))),
-            lambda a, b: F.struct(a.alias("w1"), b.alias("w2")))).alias("p"))
-        .select("doc_id", "p.w1", "p.w2")
-    ).persist()
-    c12 = bi.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    c1 = bi.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    vocab_n = (bi.select(F.col("w1").alias("w"))
-               .union(bi.select(F.col("w2").alias("w")))
-               .distinct().agg(F.count(F.lit(1)).alias("v")))
-    score = F.expr("((c12 + 1) * 1000000000L) div (c1 + v)")
-    return (bi.join(c12, ["w1", "w2"]).join(c1, "w1")
-            .crossJoin(F.broadcast(vocab_n))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-                 F.sum(score).cast("long").alias("sum_score_e9"))
-            .select("doc_id", "n_bigrams", "sum_score_e9",
-                    F.expr("sum_score_e9 div n_bigrams").cast("long")
-                    .alias("avg_score_e9"))
-            .orderBy("doc_id"))
-
-
 _TOKEN_CLIP_SQL = """
 WITH words AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS ws
@@ -6985,160 +5905,6 @@ def data_token_clip(spark, sf_dir):
             .orderBy("doc_id"))
 
 
-_FUNNEL_USERS_SQL = """
-WITH u AS (SELECT DISTINCT user_id FROM events),
-v AS (SELECT user_id, min(ts) AS t1 FROM events
-      WHERE event_type = 'view' GROUP BY 1),
-c AS (SELECT e.user_id, min(ts) AS t2 FROM events e
-      JOIN v USING (user_id)
-      WHERE event_type = 'click' AND ts > t1 GROUP BY 1),
-p AS (SELECT e.user_id, min(ts) AS t3 FROM events e
-      JOIN c USING (user_id)
-      WHERE event_type = 'purchase' AND ts > t2 GROUP BY 1)
-SELECT u.user_id,
-       CAST(CASE WHEN t3 IS NOT NULL THEN 3 WHEN t2 IS NOT NULL THEN 2
-                 WHEN t1 IS NOT NULL THEN 1 ELSE 0 END AS BIGINT) AS reached,
-       CAST(coalesce(epoch_us(t1), -1) AS BIGINT) AS t_view_us,
-       CAST(coalesce(epoch_us(t2), -1) AS BIGINT) AS t_click_us,
-       CAST(coalesce(epoch_us(t3), -1) AS BIGINT) AS t_purchase_us
-FROM u LEFT JOIN v USING (user_id) LEFT JOIN c USING (user_id)
-LEFT JOIN p USING (user_id)
-ORDER BY user_id
-"""
-
-
-@register("q_events_funnel_users", _FUNNEL_USERS_SQL)
-def q_events_funnel_users(spark, sf_dir):
-    """Ordered conversion funnel (view → click → purchase): per user, the
-    FIRST view, the first click strictly after it, and the first purchase
-    strictly after that — the product-analytics primitive behind every
-    conversion dashboard. The Spark side folds each user's time-sorted
-    event array once with F.aggregate (the sequential fold IS the funnel
-    definition — same recipe as q_events_ewma); 'first B after first A'
-    equals 'min B > min A', which is what the oracle computes with three
-    chained min-filter joins, so the hash match proves the fold ≡ the
-    relational decorrelation. Timestamps surface as epoch-µs longs (−1 =
-    stage not reached) — exact in both engines. Scale: one groupBy user_id
-    with a bounded per-user array; no window, no self-join."""
-    e = _t(spark, sf_dir, "events")
-    seq = e.select("user_id", F.struct(
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"), "event_id",
-        "event_type").alias("it"))
-    per = seq.groupBy("user_id").agg(
-        F.array_sort(F.collect_list("it")).alias("its"))
-    init = F.struct(F.lit(-1).cast("long").alias("t1"),
-                    F.lit(-1).cast("long").alias("t2"),
-                    F.lit(-1).cast("long").alias("t3"))
-    fold = F.aggregate(
-        F.col("its"), init,
-        lambda acc, x: F.struct(
-            F.when((acc["t1"] == -1) & (x["event_type"] == "view"),
-                   x["us"]).otherwise(acc["t1"]).alias("t1"),
-            F.when((acc["t1"] != -1) & (acc["t2"] == -1)
-                   & (x["event_type"] == "click") & (x["us"] > acc["t1"]),
-                   x["us"]).otherwise(acc["t2"]).alias("t2"),
-            F.when((acc["t2"] != -1) & (acc["t3"] == -1)
-                   & (x["event_type"] == "purchase") & (x["us"] > acc["t2"]),
-                   x["us"]).otherwise(acc["t3"]).alias("t3")))
-    return (per.select("user_id", fold.alias("f"))
-            .select("user_id",
-                    F.when(F.col("f.t3") != -1, 3)
-                    .when(F.col("f.t2") != -1, 2)
-                    .when(F.col("f.t1") != -1, 1)
-                    .otherwise(0).cast("long").alias("reached"),
-                    F.col("f.t1").alias("t_view_us"),
-                    F.col("f.t2").alias("t_click_us"),
-                    F.col("f.t3").alias("t_purchase_us"))
-            .orderBy("user_id"))
-
-
-_RETENTION_SQL = """
-WITH d AS (
-  SELECT user_id, epoch_us(ts) // 86400000000 AS day FROM events
-), cohort AS (
-  SELECT user_id, min(day) AS cohort_day FROM d GROUP BY 1
-), active AS (SELECT DISTINCT user_id, day FROM d)
-SELECT CAST(cohort_day AS BIGINT) AS cohort_day,
-       CAST(day - cohort_day AS BIGINT) AS day_offset,
-       CAST(count(DISTINCT a.user_id) AS BIGINT) AS active_users
-FROM active a JOIN cohort USING (user_id)
-GROUP BY 1, 2
-ORDER BY cohort_day, day_offset
-"""
-
-
-@register("q_events_retention", _RETENTION_SQL)
-def q_events_retention(spark, sf_dir):
-    """Cohort retention: users grouped by first-activity day, counted on
-    every later day they return — the (cohort_day, day_offset) activity
-    triangle behind DAU/retention curves. Day index = epoch-µs floor-div
-    86400e6, exact in both engines; the per-user cohort min and the
-    distinct (user, day) activity set are both map-side-combinable
-    aggregates keyed by user, then one small rollup on the ~(days²/2)
-    triangle. No window functions, no self-join."""
-    e = _t(spark, sf_dir, "events")
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000").alias("day")
-    d = e.select("user_id", day)
-    cohort = d.groupBy("user_id").agg(F.min("day").alias("cohort_day"))
-    active = d.distinct()
-    return (active.join(cohort, "user_id")
-            .groupBy(F.col("cohort_day").cast("long").alias("cohort_day"),
-                     (F.col("day") - F.col("cohort_day")).cast("long")
-                     .alias("day_offset"))
-            .agg(F.countDistinct("user_id").cast("long")
-                 .alias("active_users"))
-            .orderBy("cohort_day", "day_offset"))
-
-
-_PRED_CARD_SQL = f"""
-WITH m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), pairs AS (
-  SELECT a.term AS term_a, b.term AS term_b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), typed AS (
-  SELECT typ.pred, p.term_a, p.term_b
-  FROM pairs p JOIN {kg_docs.typing_values_sql()}
-    ON typ.term_a = p.term_a AND typ.term_b = p.term_b
-)
-SELECT pred, CAST(count(*) AS BIGINT) AS n_edges,
-       CAST(count(DISTINCT term_a) AS BIGINT) AS n_subj,
-       CAST(count(DISTINCT term_b) AS BIGINT) AS n_obj,
-       CAST(count(*) * 1000000 // count(DISTINCT term_a) AS BIGINT)
-         AS fanout_e6,
-       CAST(count(*) * 1000000 // count(DISTINCT term_b) AS BIGINT)
-         AS fanin_e6
-FROM typed GROUP BY pred ORDER BY pred
-"""
-
-
-@register("kg_pred_cardinality_docs", _PRED_CARD_SQL)
-def kg_pred_cardinality_docs(spark, sf_dir):
-    """Predicate cardinality profile over the typed KG: per relationship
-    type, edge count, distinct-subject and distinct-object counts, and the
-    integer fixed-point fan-out/fan-in ratios (edges·10⁶ div subjects /
-    objects) — the schema-statistics pass a KG query optimizer or
-    embedding-model trainer reads first (functional predicates train
-    differently from many-many ones). One aggregate over the memoized
-    typed-edge table; multi-distinct expands to Spark's standard expand +
-    two-phase plan — still a single shuffle on the 7-value pred key."""
-    te = _typed_edges(spark, sf_dir)
-    return (te.groupBy("pred")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_edges"),
-                 F.countDistinct("term_a").cast("long").alias("n_subj"),
-                 F.countDistinct("term_b").cast("long").alias("n_obj"))
-            .select("pred", "n_edges", "n_subj", "n_obj",
-                    F.expr("n_edges * 1000000L div n_subj").cast("long")
-                    .alias("fanout_e6"),
-                    F.expr("n_edges * 1000000L div n_obj").cast("long")
-                    .alias("fanin_e6"))
-            .orderBy("pred"))
-
-
 _LEAKSAFE_SPLIT_SQL = """
 WITH g AS (SELECT doc_id, md5(text) AS grp FROM documents),
 b AS (
@@ -7168,286 +5934,6 @@ def data_leakage_safe_split(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").withColumn("grp", F.md5("text"))
     return (hash_split(d, key_col="grp")
             .select("doc_id", "grp", "split").orderBy("doc_id"))
-
-
-_COND_LAYERS_SQL_TPL = """
-WITH RECURSIVE pos AS (
-  SELECT doc_id, term,
-         list_position(string_split(text, ' '), term) AS fp
-  FROM documents, {lex}
-  WHERE list_position(string_split(text, ' '), term) > 0
-),
-cnt AS (
-  SELECT a.term AS src, b.term AS dst, count(*) AS w
-  FROM pos a JOIN pos b ON a.doc_id = b.doc_id AND a.fp < b.fp
-  GROUP BY 1, 2
-),
-de AS (
-  SELECT c1.src, c1.dst
-  FROM cnt c1 JOIN cnt c2 ON c1.src = c2.dst AND c1.dst = c2.src
-  WHERE c1.w >= c2.w + 12
-),
-verts AS (SELECT DISTINCT src AS v FROM de
-          UNION SELECT DISTINCT dst FROM de),
-reach(a, b) AS (
-  SELECT v, v FROM verts
-  UNION
-  SELECT r.a, e.dst FROM reach r JOIN de e ON r.b = e.src
-),
-scc AS (
-  SELECT r1.a AS term, min(r1.b) AS scc_id
-  FROM reach r1
-  WHERE EXISTS (SELECT 1 FROM reach r2 WHERE r2.a = r1.b AND r2.b = r1.a)
-  GROUP BY r1.a
-),
-ce AS (
-  SELECT DISTINCT s1.scc_id AS src, s2.scc_id AS dst
-  FROM de JOIN scc s1 ON s1.term = de.src
-  JOIN scc s2 ON s2.term = de.dst
-  WHERE s1.scc_id <> s2.scc_id
-),
-cverts AS (SELECT DISTINCT scc_id AS v FROM scc),
-paths(v, l) AS (
-  SELECT v, 0 FROM cverts
-  UNION
-  SELECT ce.dst, paths.l + 1 FROM paths JOIN ce ON ce.src = paths.v
-),
-layers AS (SELECT v AS scc_id, max(l) AS layer FROM paths GROUP BY v)
-SELECT l.scc_id, CAST(l.layer AS BIGINT) AS layer,
-       CAST(count(*) AS BIGINT) AS n_members
-FROM layers l JOIN scc ON scc.scc_id = l.scc_id
-GROUP BY 1, 2
-ORDER BY layer, l.scc_id
-"""
-
-
-@register("kg_condensation_layers_docs",
-          _COND_LAYERS_SQL_TPL.format(lex=kg_docs.lexicon_values_sql()))
-def kg_condensation_layers_docs(spark, sf_dir):
-    """Topological depth of the mention-order graph's CONDENSATION: SCCs
-    contracted to super-nodes, then layer = longest path ending at each
-    super-node (sources at 0) — 'which concept clusters are upstream of
-    which' plus the depth bound any staged traversal of the KG inherits.
-    Composes the two graph primitives: strongly_connected_components →
-    contract → dag_longest_path_layers (relaxation converges in exactly
-    `depth` rounds on the DAG and raises on a cycle, so a wrong SCC
-    contraction cannot silently produce wrong layers). The oracle chains
-    two recursive CTEs (closure → SCC → path enumeration) — the hash match
-    proves contraction + relaxation against first-principles SQL."""
-    from .operators.graph_algos import (
-        dag_longest_path_layers,
-        strongly_connected_components,
-    )
-    de = _mention_order_edges(spark, sf_dir)
-    scc = strongly_connected_components(de, src="src", dst="dst").persist()
-    s1 = scc.select(F.col("node").alias("src"), F.col("scc_id").alias("c1"))
-    s2 = scc.select(F.col("node").alias("dst"), F.col("scc_id").alias("c2"))
-    ce = (de.join(s1, "src").join(s2, "dst")
-          .filter(F.col("c1") != F.col("c2"))
-          .select(F.col("c1").alias("src"), F.col("c2").alias("dst"))
-          .distinct())
-    layers = dag_longest_path_layers(ce, src="src", dst="dst")
-    members = scc.groupBy("scc_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_members"))
-    return (members.join(layers.withColumnRenamed("node", "scc_id"),
-                         "scc_id", "left")
-            .select("scc_id",
-                    F.coalesce(F.col("layer"), F.lit(0)).cast("long")
-                    .alias("layer"), "n_members")
-            .orderBy("layer", "scc_id"))
-
-
-_MARKOV_SQL = """
-WITH seq AS (
-  SELECT user_id,
-         list(event_type ORDER BY ts, event_id) AS types
-  FROM events GROUP BY user_id
-), tr AS (
-  SELECT z[1] AS prev_type, z[2] AS next_type
-  FROM (SELECT unnest(list_zip(types, types[2:])) AS z FROM seq)
-  WHERE z[2] IS NOT NULL
-), c AS (
-  SELECT prev_type, next_type, count(*) AS n
-  FROM tr GROUP BY 1, 2
-), tot AS (SELECT prev_type, sum(n) AS t FROM c GROUP BY 1)
-SELECT c.prev_type, c.next_type, CAST(n AS BIGINT) AS n_transitions,
-       CAST(n * 1000000 // t AS BIGINT) AS p_e6
-FROM c JOIN tot ON c.prev_type = tot.prev_type
-ORDER BY c.prev_type, next_type
-"""
-
-
-@register("q_events_markov", _MARKOV_SQL)
-def q_events_markov(spark, sf_dir):
-    """First-order Markov transition matrix of event types: each user's
-    (ts, event_id)-ordered event sequence zipped with its own tail, the
-    (prev → next) transitions counted corpus-wide, with the row-normalized
-    probability as an exact ×10⁶ integer ratio — the behavioral model
-    behind next-action prediction and anomaly scoring. One groupBy-user
-    array build (sequential order IS the definition), one zip, one count
-    on a |types|² key space — no window shuffle, no self-join."""
-    e = _t(spark, sf_dir, "events")
-    per = (e.select("user_id", F.struct(
-        F.col("ts"), F.col("event_id"), F.col("event_type").alias("et"))
-        .alias("it"))
-        .groupBy("user_id")
-        .agg(F.array_sort(F.collect_list("it")).alias("its")))
-    types = F.transform(F.col("its"), lambda x: x["et"])
-    tr = per.select(F.explode(F.zip_with(
-        types, F.slice(types, 2, F.greatest(F.size(types) - 1, F.lit(0))),
-        lambda a, b: F.struct(a.alias("prev_type"), b.alias("next_type"))))
-        .alias("z")).filter(F.col("z.next_type").isNotNull())
-    c = (tr.select("z.prev_type", "z.next_type")
-         .groupBy("prev_type", "next_type")
-         .agg(F.count(F.lit(1)).alias("n")))
-    tot = c.groupBy(F.col("prev_type").alias("pt")).agg(
-        F.sum("n").alias("t"))
-    return (c.join(F.broadcast(tot), F.col("prev_type") == F.col("pt"))
-            .select("prev_type", "next_type",
-                    F.col("n").cast("long").alias("n_transitions"),
-                    F.expr("n * 1000000L div t").cast("long").alias("p_e6"))
-            .orderBy("prev_type", "next_type"))
-
-
-_LEXDIV_SQL = """
-WITH w AS (
-  SELECT doc_id, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word
-  FROM documents
-), wc AS (
-  SELECT doc_id, word, count(*) AS c FROM w GROUP BY 1, 2
-)
-SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_tokens,
-       CAST(count(*) AS BIGINT) AS n_types,
-       CAST(count(*) FILTER (WHERE c = 1) AS BIGINT) AS n_hapax,
-       CAST(count(*) * 1000000 // sum(c) AS BIGINT) AS ttr_e6,
-       CAST(count(*) FILTER (WHERE c = 1) * 1000000 // count(*) AS BIGINT)
-         AS hapax_ratio_e6
-FROM wc GROUP BY doc_id
-ORDER BY doc_id
-"""
-
-
-@register("text_lexical_diversity", _LEXDIV_SQL)
-def text_lexical_diversity(spark, sf_dir):
-    """Lexical diversity per document: type/token ratio and hapax-legomena
-    ratio as exact ×10⁶ integer ratios — the vocabulary-richness signal
-    quality filters use to separate template spam (low TTR) from natural
-    prose, complementary to the repetition stats (which look at n-gram
-    structure, not vocabulary). Map-side explode + one two-level
-    aggregate keyed by doc; no joins."""
-    d = _t(spark, sf_dir, "documents")
-    ws = F.split(F.trim(F.lower("text")), r"\s+")
-    wc = (d.select("doc_id", F.explode(ws).alias("word"))
-          .groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("c")))
-    return (wc.groupBy("doc_id")
-            .agg(F.sum("c").cast("long").alias("n_tokens"),
-                 F.count(F.lit(1)).cast("long").alias("n_types"),
-                 F.sum(F.when(F.col("c") == 1, 1).otherwise(0))
-                 .cast("long").alias("n_hapax"))
-            .select("doc_id", "n_tokens", "n_types", "n_hapax",
-                    F.expr("n_types * 1000000L div n_tokens").cast("long")
-                    .alias("ttr_e6"),
-                    F.expr("n_hapax * 1000000L div n_types").cast("long")
-                    .alias("hapax_ratio_e6"))
-            .orderBy("doc_id"))
-
-
-_NOVELTY_SQL = """
-WITH w AS (
-  SELECT doc_id, string_split_regex(trim(lower(text)), '\\s+') AS ws
-  FROM documents
-), sh AS (
-  SELECT DISTINCT doc_id,
-         concat(z[1], ' ', z[2], ' ', z[3]) AS shingle
-  FROM (SELECT doc_id,
-               unnest(list_zip(ws, ws[2:], ws[3:])) AS z FROM w)
-  WHERE z[3] IS NOT NULL
-), df AS (
-  SELECT shingle, count(*) AS df FROM sh GROUP BY shingle
-)
-SELECT sh.doc_id, CAST(count(*) AS BIGINT) AS n_shingles,
-       CAST(count(*) FILTER (WHERE df = 1) AS BIGINT) AS n_unique,
-       CAST(count(*) FILTER (WHERE df = 1) * 1000000 // count(*) AS BIGINT)
-         AS novelty_e6
-FROM sh JOIN df ON sh.shingle = df.shingle
-GROUP BY sh.doc_id
-ORDER BY doc_id
-"""
-
-
-@register("text_novelty", _NOVELTY_SQL)
-def text_novelty(spark, sf_dir):
-    """Per-document novelty: the fraction of the document's distinct word
-    3-shingles that appear NOWHERE else in the corpus (document frequency
-    1), as an exact ×10⁶ ratio — the inverse signal of near-duplication,
-    used to up-weight genuinely novel documents in mixture building. The
-    shingle DF table is the same artifact the MinHash pipeline banded —
-    here it is consumed exactly; shingles explode map-side from one
-    3-way zip, and the DF join is an equi-join on the shingle hash space
-    (at 100 TB: md5-prefix the join key, as text_contamination does)."""
-    d = _t(spark, sf_dir, "documents")
-    ws = F.split(F.trim(F.lower("text")), r"\s+")
-    n3 = F.greatest(F.size(F.col("ws")) - 2, F.lit(0))
-    sh = (d.select("doc_id", ws.alias("ws"))
-          .select("doc_id", F.explode(F.zip_with(
-              F.slice("ws", 1, n3),
-              F.zip_with(F.slice("ws", 2, n3), F.slice("ws", 3, n3),
-                         lambda b, c: F.concat_ws(" ", b, c)),
-              lambda a, bc: F.concat_ws(" ", a, bc))).alias("shingle"))
-          .distinct()).persist()
-    df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    return (sh.join(df, "shingle")
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_shingles"),
-                 F.sum(F.when(F.col("df") == 1, 1).otherwise(0))
-                 .cast("long").alias("n_unique"))
-            .select("doc_id", "n_shingles", "n_unique",
-                    F.expr("n_unique * 1000000L div n_shingles")
-                    .cast("long").alias("novelty_e6"))
-            .orderBy("doc_id"))
-
-
-_CUMUSERS_SQL = """
-WITH d AS (
-  SELECT user_id, epoch_us(ts) // 86400000000 AS day FROM events
-), first_day AS (
-  SELECT user_id, min(day) AS f FROM d GROUP BY 1
-), per_day AS (
-  SELECT f AS day, count(*) AS new_users FROM first_day GROUP BY 1
-), days AS (SELECT DISTINCT day FROM d)
-SELECT CAST(days.day AS BIGINT) AS day,
-       CAST(coalesce(new_users, 0) AS BIGINT) AS new_users,
-       CAST(sum(coalesce(new_users, 0)) OVER (
-         ORDER BY days.day ROWS UNBOUNDED PRECEDING) AS BIGINT)
-         AS cumulative_users
-FROM days LEFT JOIN per_day ON days.day = per_day.day
-ORDER BY day
-"""
-
-
-@register("q_events_cumulative_users", _CUMUSERS_SQL)
-def q_events_cumulative_users(spark, sf_dir):
-    """Cumulative distinct users by day — the growth curve. COUNT(DISTINCT)
-    over a running window is unsupported (and quadratic) in both engines;
-    the standard rewrite is first-occurrence attribution: each user counts
-    once on their first-activity day, and the running SUM of those
-    first-occurrences IS the cumulative distinct count. One user-keyed min,
-    one day rollup, one tiny ordered prefix sum."""
-    e = _t(spark, sf_dir, "events")
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-    d = e.select("user_id", day.alias("day"))
-    first_day = d.groupBy("user_id").agg(F.min("day").alias("f"))
-    per_day = first_day.groupBy(F.col("f").alias("nday")).agg(
-        F.count(F.lit(1)).alias("new_users"))
-    days = d.select("day").distinct()
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    return (days.join(per_day, days["day"] == per_day["nday"], "left")
-            .select(F.col("day").cast("long").alias("day"),
-                    F.coalesce("new_users", F.lit(0)).cast("long")
-                    .alias("new_users"))
-            .withColumn("cumulative_users",
-                        F.sum("new_users").over(w).cast("long"))
-            .orderBy("day"))
 
 
 def _bloom_pos_sql(tag: str, expr: str, m: int = 256) -> str:
@@ -7523,3647 +6009,6 @@ def sketch_bloom_prune(spark, sf_dir):
                     F.coalesce("actual", F.lit(0)).cast("long")
                     .alias("actual"))
             .orderBy("user_id"))
-
-
-_KMV_QUANT_SQL = """
-WITH h AS (
-  SELECT value,
-         md5(concat('kmvq:42:', CAST(event_id AS VARCHAR))) AS hk
-  FROM events
-), sample AS (
-  SELECT value FROM h ORDER BY hk LIMIT 128
-)
-SELECT
-  (SELECT percentile_disc(0.5) WITHIN GROUP (ORDER BY value)
-   FROM events) AS exact_p50,
-  (SELECT percentile_disc(0.9) WITHIN GROUP (ORDER BY value)
-   FROM events) AS exact_p90,
-  (SELECT percentile_disc(0.5) WITHIN GROUP (ORDER BY value)
-   FROM sample) AS est_p50,
-  (SELECT percentile_disc(0.9) WITHIN GROUP (ORDER BY value)
-   FROM sample) AS est_p90
-"""
-
-
-@register("sketch_kmv_quantiles", _KMV_QUANT_SQL)
-def sketch_kmv_quantiles(spark, sf_dir):
-    """Quantile estimation from a KMV hash-sample: the 128 rows with the
-    smallest md5 keys are a uniform, DETERMINISTIC, mergeable sample (the
-    k-minimum-values trick applied to rows instead of distinct values —
-    union = keep the 128 smallest of both sides), and percentile_disc on
-    the sample estimates the stream's quantiles. Unlike reservoir sampling
-    the result is independent of arrival and partition order — the
-    property that makes it exactly reproducible in the oracle. Values
-    pass through untouched (percentile_disc selects, never interpolates),
-    so no float arithmetic exists to diverge. Output: exact vs estimated
-    p50/p90 side by side — the estimation error is the evidence the
-    sketch is honest. Scale: the k-smallest selection is a per-partition
-    top-k + single 128-row merge; the exact side exists only as the
-    yardstick."""
-    e = _t(spark, sf_dir, "events")
-    hk = F.md5(F.concat(F.lit("kmvq:42:"), F.col("event_id").cast("string")))
-    sample = (e.select("value", hk.alias("hk"))
-              .orderBy("hk").limit(128))
-    exact = e.agg(
-        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY value)")
-        .alias("exact_p50"),
-        F.expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY value)")
-        .alias("exact_p90"))
-    est = sample.agg(
-        F.expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY value)")
-        .alias("est_p50"),
-        F.expr("percentile_disc(0.9) WITHIN GROUP (ORDER BY value)")
-        .alias("est_p90"))
-    return exact.crossJoin(est)
-
-
-_QUALITY_RANK_SQL = """
-WITH w AS (
-  SELECT doc_id, source,
-         string_split_regex(trim(lower(text)), '\\s+') AS ws
-  FROM documents
-), wx AS (
-  SELECT doc_id, unnest(ws) AS word FROM w
-), wc AS (SELECT doc_id, word, count(*) AS c FROM wx GROUP BY 1, 2),
-ttr AS (
-  SELECT doc_id, count(*) * 1000000 // sum(c) AS ttr_e6 FROM wc GROUP BY 1
-), sh AS (
-  SELECT DISTINCT doc_id, concat(z[1], ' ', z[2], ' ', z[3]) AS shingle
-  FROM (SELECT doc_id, unnest(list_zip(ws, ws[2:], ws[3:])) AS z FROM w)
-  WHERE z[3] IS NOT NULL
-), df AS (SELECT shingle, count(*) AS df FROM sh GROUP BY 1),
-nov AS (
-  SELECT sh.doc_id,
-         count(*) FILTER (WHERE df = 1) * 1000000 // count(*) AS novelty_e6
-  FROM sh JOIN df ON sh.shingle = df.shingle GROUP BY 1
-), scored AS (
-  SELECT w.doc_id, w.source,
-         CAST(ttr_e6 + coalesce(novelty_e6, 0) AS BIGINT) AS quality_e6
-  FROM w JOIN ttr ON w.doc_id = ttr.doc_id
-  LEFT JOIN nov ON w.doc_id = nov.doc_id
-)
-SELECT doc_id, source, quality_e6,
-       CAST(rnk AS BIGINT) AS rnk
-FROM (SELECT *, row_number() OVER (
-        PARTITION BY source ORDER BY quality_e6 DESC, doc_id) AS rnk
-      FROM scored)
-WHERE rnk <= 10
-ORDER BY source, rnk
-"""
-
-
-@register("data_quality_rank", _QUALITY_RANK_SQL)
-def data_quality_rank(spark, sf_dir):
-    """Composite quality ranking — the curriculum/mixture selection step:
-    each document scored by an integer composite (type-token ratio +
-    3-gram novelty, both ×10⁶ — diversity AND uniqueness), then the top
-    10 per source taken with a total order (score desc, doc_id). Shows
-    score fusion + per-group top-k as one pipeline over the same exploded
-    word/shingle artifacts the individual metrics use; at scale the
-    per-source top-k is the salted two-phase cap (_salted_topk), here the
-    rank window on a bounded group count."""
-    d = _t(spark, sf_dir, "documents")
-    ws = F.split(F.trim(F.lower("text")), r"\s+")
-    base = d.select("doc_id", "source", ws.alias("ws")).persist()
-    wc = (base.select("doc_id", F.explode("ws").alias("word"))
-          .groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("c")))
-    ttr = wc.groupBy("doc_id").agg(
-        F.expr("count(1) * 1000000L div sum(c)").alias("ttr_e6"))
-    n3 = F.greatest(F.size(F.col("ws")) - 2, F.lit(0))
-    sh = (base.select("doc_id", F.explode(F.zip_with(
-        F.slice("ws", 1, n3),
-        F.zip_with(F.slice("ws", 2, n3), F.slice("ws", 3, n3),
-                   lambda b, c: F.concat_ws(" ", b, c)),
-        lambda a, bc: F.concat_ws(" ", a, bc))).alias("shingle"))
-        .distinct())
-    df = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("df"))
-    nov = (sh.join(df, "shingle").groupBy("doc_id")
-           .agg(F.expr("sum(if(df = 1, 1, 0)) * 1000000L div count(1)")
-                .alias("novelty_e6")))
-    scored = (base.select("doc_id", "source")
-              .join(ttr, "doc_id")
-              .join(nov, "doc_id", "left")
-              .select("doc_id", "source",
-                      (F.col("ttr_e6")
-                       + F.coalesce("novelty_e6", F.lit(0)))
-                      .cast("long").alias("quality_e6")))
-    w = Window.partitionBy("source").orderBy(
-        F.desc("quality_e6"), "doc_id")
-    return (scored.withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= 10)
-            .orderBy("source", "rnk"))
-
-
-_NODE2VEC_SQL = f"""
-WITH m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), pairs AS (
-  SELECT a.term AS term_a, b.term AS term_b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), und AS (
-  SELECT term_a AS u, term_b AS v FROM pairs
-  UNION ALL SELECT term_b, term_a FROM pairs
-), w AS (
-  SELECT p.u AS prev, p.v AS cur, n.v AS next,
-         CASE WHEN n.v = p.u THEN 1
-              WHEN EXISTS (SELECT 1 FROM und e
-                           WHERE e.u = p.u AND e.v = n.v) THEN 2
-              ELSE 1 END AS w2
-  FROM und p JOIN und n ON p.v = n.u
-), tot AS (SELECT prev, cur, sum(w2) AS t FROM w GROUP BY 1, 2)
-SELECT w.prev, w.cur, w.next,
-       CAST(w2 AS BIGINT) AS w2,
-       CAST(w2 * 1000000 // t AS BIGINT) AS p_e6
-FROM w JOIN tot ON w.prev = tot.prev AND w.cur = tot.cur
-ORDER BY w.prev, w.cur, w.next
-"""
-
-
-@register("kg_node2vec_probs_docs", _NODE2VEC_SQL)
-def kg_node2vec_probs_docs(spark, sf_dir):
-    """Second-order (node2vec, Grover & Leskovec KDD'16) walk-transition
-    table over the co-occurrence KG: for every (prev → cur → next) step,
-    the return/in-out-biased weight with p = q = 2 expressed as the
-    INTEGER scale ×2 — return edges and exploration edges weigh 1,
-    triangle-closing edges (next adjacent to prev) weigh 2 — and the
-    row-normalized probability as an exact ×10⁶ ratio. This is the
-    sampling table a distributed node2vec materializes BEFORE walking
-    (the walk itself then needs no graph access — it reads this table),
-    which is exactly how you run it at 10⁹ edges. The triangle test is a
-    left join against the edge list, not an EXISTS subquery, so the plan
-    is three self-equi-joins on a vocabulary-bounded table."""
-    e = _cooc_edges(spark, sf_dir)
-    und = (e.select(F.col("term_a").alias("u"), F.col("term_b").alias("v"))
-           .unionByName(e.select(F.col("term_b").alias("u"),
-                                 F.col("term_a").alias("v")))).persist()
-    p = und.select(F.col("u").alias("prev"), F.col("v").alias("cur"))
-    n = und.select(F.col("u").alias("ncur"), F.col("v").alias("next"))
-    tri = und.select(F.col("u").alias("tp"), F.col("v").alias("tn"),
-                     F.lit(1).alias("is_tri"))
-    w = (p.join(n, F.col("cur") == F.col("ncur"))
-         .join(tri, (F.col("prev") == F.col("tp"))
-               & (F.col("next") == F.col("tn")), "left")
-         .select("prev", "cur", "next",
-                 F.when(F.col("next") == F.col("prev"), 1)
-                 .when(F.col("is_tri").isNotNull(), 2)
-                 .otherwise(1).cast("long").alias("w2")))
-    tot = w.groupBy(F.col("prev").alias("p2"), F.col("cur").alias("c2")) \
-        .agg(F.sum("w2").alias("t"))
-    return (w.join(tot, (F.col("prev") == F.col("p2"))
-                   & (F.col("cur") == F.col("c2")))
-            .select("prev", "cur", "next", "w2",
-                    F.expr("w2 * 1000000L div t").cast("long").alias("p_e6"))
-            .orderBy("prev", "cur", "next"))
-
-
-_FUZZY_MATCH_SQL = f"""
-WITH vocab AS (
-  SELECT DISTINCT unnest(string_split(text, ' ')) AS word FROM documents
-)
-SELECT lex.term, vocab.word,
-       CAST(levenshtein(vocab.word, lex.term) AS BIGINT) AS dist
-FROM vocab, {kg_docs.lexicon_values_sql()}
-WHERE levenshtein(vocab.word, lex.term) <= 2
-ORDER BY term, word
-"""
-
-
-@register("kg_fuzzy_term_match", _FUZZY_MATCH_SQL)
-def kg_fuzzy_term_match(spark, sf_dir):
-    """Edit-distance entity-linking candidates: every corpus vocabulary
-    word within Levenshtein distance 2 of a lexicon term (distance 0 =
-    the exact mention, 1-2 = typo/inflection candidates the fuzzy linker
-    scores). The distance runs on the DISTINCT VOCABULARY cross the tiny
-    broadcast lexicon — never on the corpus rows — which is the only
-    shape that survives 100 TB (vocabulary grows ~Heaps-sublinearly;
-    the reference's fuzzy resolver rates pairs the same way,
-    entity_resolver.py). Both engines implement the standard Levenshtein
-    DP, so the distances are integers that hash exactly."""
-    d = _t(spark, sf_dir, "documents")
-    vocab = (d.select(F.explode(F.split(F.col("text"), " ")).alias("word"))
-             .distinct())
-    lex = F.broadcast(kg_docs.lexicon_df(spark))
-    return (vocab.join(lex)
-            .filter(F.levenshtein(F.col("word"), F.col("term")) <= 2)
-            .select("term", "word",
-                    F.levenshtein(F.col("word"), F.col("term"))
-                    .cast("long").alias("dist"))
-            .orderBy("term", "word"))
-
-
-_PHRASE_SQL = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-), bi AS (
-  SELECT doc_id, unnest(list_zip(ws, ws[2:])) AS z FROM w
-)
-SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matches
-FROM bi
-WHERE z[1] = 'fast' AND z[2] = 'table'
-GROUP BY doc_id
-ORDER BY doc_id
-"""
-
-
-@register("search_phrase", _PHRASE_SQL)
-def search_phrase(spark, sf_dir):
-    """Positional-index phrase search: documents containing the exact
-    consecutive phrase 'fast table', with occurrence counts. The Spark
-    side builds the POSITIONAL POSTINGS list — (term, doc, pos) via
-    posexplode — and intersects postings['fast'] with postings['table']
-    on doc & pos+1, which is how a real inverted index answers phrase
-    queries without touching the documents (search_bm25's index grows a
-    position column and phrase predicates become self-joins). The oracle
-    scans bigrams directly — two different plans, same semantics, one
-    hash. At scale the postings join is an equi-join on (md5-bucketed)
-    term+doc; only the two query terms' postings are ever read."""
-    d = _t(spark, sf_dir, "documents")
-    post = d.select(
-        "doc_id", F.posexplode(F.split(F.col("text"), " ")).alias("pos", "term"))
-    a = post.filter(F.col("term") == "fast") \
-        .select("doc_id", F.col("pos").alias("pa"))
-    b = post.filter(F.col("term") == "table") \
-        .select(F.col("doc_id").alias("db"), F.col("pos").alias("pb"))
-    return (a.join(b, (F.col("doc_id") == F.col("db"))
-                   & (F.col("pb") == F.col("pa") + 1))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_matches"))
-            .orderBy("doc_id"))
-
-
-_WINSOR_SQL = """
-WITH b AS (
-  SELECT percentile_disc(0.05) WITHIN GROUP (ORDER BY value) AS lo,
-         percentile_disc(0.95) WITHIN GROUP (ORDER BY value) AS hi
-  FROM events
-)
-SELECT event_id, value,
-       greatest(lo, least(hi, value)) AS value_winsorized,
-       CAST(value < lo OR value > hi AS BIGINT) AS was_clipped
-FROM events, b
-ORDER BY event_id
-"""
-
-
-@register("q_events_winsorize", _WINSOR_SQL)
-def q_events_winsorize(spark, sf_dir):
-    """Winsorization — the outlier-clipping cleaning step: every value
-    clamped into the [p5, p95] band, with a clipped flag. percentile_disc
-    SELECTS existing values (never interpolates) and least/greatest move
-    values without arithmetic, so no float op exists to diverge between
-    engines. The two-quantile bound is ONE tiny aggregate broadcast onto
-    a map-side clamp — the cheapest possible shape; an approximate
-    percentile would replace the exact sort with a sketch at 100 TB but
-    the clamp stays identical."""
-    e = _t(spark, sf_dir, "events")
-    b = e.agg(
-        F.expr("percentile_disc(0.05) WITHIN GROUP (ORDER BY value)")
-        .alias("lo"),
-        F.expr("percentile_disc(0.95) WITHIN GROUP (ORDER BY value)")
-        .alias("hi"))
-    return (e.crossJoin(F.broadcast(b))
-            .select("event_id", "value",
-                    F.greatest("lo", F.least("hi", F.col("value")))
-                    .alias("value_winsorized"),
-                    ((F.col("value") < F.col("lo"))
-                     | (F.col("value") > F.col("hi"))).cast("long")
-                    .alias("was_clipped"))
-            .orderBy("event_id"))
-
-
-_CUSUM_SQL = """
-WITH d AS (
-  SELECT epoch_us(ts) // 86400000000 AS day, count(*) AS c
-  FROM events GROUP BY 1
-), t AS (SELECT sum(c) AS total, count(*) AS n FROM d),
-cu AS (
-  SELECT day, c,
-         sum(n * c - total) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING)
-           AS cusum
-  FROM d, t
-), mx AS (SELECT max(abs(cusum)) AS m FROM cu)
-SELECT CAST(day AS BIGINT) AS day, CAST(c AS BIGINT) AS n_events,
-       CAST(cusum AS BIGINT) AS cusum_scaled,
-       CAST(abs(cusum) = m AS BIGINT) AS is_changepoint
-FROM cu, mx
-ORDER BY day
-"""
-
-
-@register("q_events_changepoint", _CUSUM_SQL)
-def q_events_changepoint(spark, sf_dir):
-    """CUSUM change-point detection on the daily event-rate series: the
-    cumulative sum of (n·cₖ − total) — the mean-subtracted prefix sum
-    scaled by n so it stays INTEGER — peaks in magnitude at the day the
-    rate regime shifts. Flags every day attaining the max |CUSUM| (ties
-    all flagged, deterministically). The series is day-granular, so the
-    ordered prefix window runs over a ~constant-size axis regardless of
-    corpus size; the daily counts underneath are one map-side-combinable
-    aggregate."""
-    e = _t(spark, sf_dir, "events")
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-    d = e.groupBy(day.alias("day")).agg(F.count(F.lit(1)).alias("c"))
-    t = d.agg(F.sum("c").alias("total"), F.count(F.lit(1)).alias("n"))
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    cu = (d.crossJoin(F.broadcast(t))
-          .withColumn("cusum", F.sum(F.col("n") * F.col("c")
-                                     - F.col("total")).over(w)))
-    mx = cu.agg(F.max(F.abs("cusum")).alias("m"))
-    return (cu.crossJoin(F.broadcast(mx))
-            .select(F.col("day").cast("long").alias("day"),
-                    F.col("c").cast("long").alias("n_events"),
-                    F.col("cusum").cast("long").alias("cusum_scaled"),
-                    (F.abs("cusum") == F.col("m")).cast("long")
-                    .alias("is_changepoint"))
-            .orderBy("day"))
-
-
-_EMB_PROFILE_SQL = """
-WITH ix AS (
-  SELECT embedding, unnest(generate_series(1, len(embedding))) AS i
-  FROM embeddings
-), x AS (
-  SELECT i - 1 AS dim,
-         CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS v_e6
-  FROM ix
-)
-SELECT CAST(dim AS BIGINT) AS dim, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(v_e6) // count(*) AS BIGINT) AS mean_e6,
-       CAST(min(v_e6) AS BIGINT) AS min_e6,
-       CAST(max(v_e6) AS BIGINT) AS max_e6
-FROM x GROUP BY dim ORDER BY dim
-"""
-
-
-@register("ann_embedding_profile", _EMB_PROFILE_SQL)
-def ann_embedding_profile(spark, sf_dir):
-    """Per-dimension embedding profile (the feature-store health check
-    that catches dead dimensions and scale drift before they poison ANN
-    recall): each component fixed-pointed to ×10⁶ longs — the SAME double
-    multiply+floor in both engines, so the stats are exact integers — then
-    count/mean/min/max per dimension. posexplode keys the shuffle by a
-    64-value dimension space; sums are map-side-combinable, so the profile
-    costs one linear scan at any corpus size."""
-    em = _t(spark, sf_dir, "embeddings")
-    x = em.select(F.posexplode("embedding").alias("dim", "v")) \
-        .select("dim", F.floor(F.col("v").cast("double") * 1_000_000 + F.lit(0.5))
-                .cast("long").alias("v_e6"))
-    return (x.groupBy("dim")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                 F.expr("sum(v_e6) div count(1)").cast("long")
-                 .alias("mean_e6"),
-                 F.min("v_e6").cast("long").alias("min_e6"),
-                 F.max("v_e6").cast("long").alias("max_e6"))
-            .select(F.col("dim").cast("long").alias("dim"), "n", "mean_e6",
-                    "min_e6", "max_e6")
-            .orderBy("dim"))
-
-
-_BLOCKING_SQL = """
-WITH b AS (
-  SELECT lang, source, count(*) AS n FROM documents GROUP BY 1, 2
-)
-SELECT lang, source, CAST(n AS BIGINT) AS block_size,
-       CAST(n * (n - 1) // 2 AS BIGINT) AS candidate_pairs,
-       CAST(n * (n - 1) * 500000 // (SELECT sum(n * (n - 1)) FROM b)
-            AS BIGINT) AS pair_share_e6
-FROM b
-ORDER BY lang, source
-"""
-
-
-@register("dedup_blocking_stats", _BLOCKING_SQL)
-def dedup_blocking_stats(spark, sf_dir):
-    """Blocking-key diagnostics for entity resolution / dedup: per
-    (lang, source) block, the size, the all-pairs candidate count
-    n·(n−1)/2 a naive matcher would score, and each block's exact ×10⁶
-    share of the total pair budget — the report that tells you WHICH
-    block is the quadratic straggler before you run the matcher (the
-    prefix-filter fix in dedup.py exists because of exactly this
-    shape). One tiny aggregate + a 1-row total broadcast."""
-    d = _t(spark, sf_dir, "documents")
-    b = (d.groupBy("lang", "source")
-         .agg(F.count(F.lit(1)).alias("n"))).persist()
-    tot = b.agg(F.sum(F.col("n") * (F.col("n") - 1)).alias("tp"))
-    return (b.crossJoin(F.broadcast(tot))
-            .select("lang", "source",
-                    F.col("n").cast("long").alias("block_size"),
-                    F.expr("n * (n - 1) div 2").cast("long")
-                    .alias("candidate_pairs"),
-                    F.expr("n * (n - 1) * 500000L div tp").cast("long")
-                    .alias("pair_share_e6"))
-            .orderBy("lang", "source"))
-
-
-_TWOHOP_CONF_SQL = f"""
-WITH m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), n AS (
-  SELECT term, count(*) AS n FROM m GROUP BY term
-), pairs AS (
-  SELECT a.term AS term_a, b.term AS term_b, count(*) AS common
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 330
-), e AS (
-  SELECT term_a, term_b,
-         round(least(1.0, CAST(common AS DOUBLE) / 10.0), 6) AS conf
-  FROM pairs
-), und AS (
-  SELECT term_a AS u, term_b AS v, conf FROM e
-  UNION ALL SELECT term_b, term_a, conf FROM e
-)
-SELECT a.u AS src, b.v AS dst,
-       CAST(count(*) AS BIGINT) AS n_paths,
-       max(a.conf * b.conf) AS best_conf
-FROM und a JOIN und b ON a.v = b.u
-WHERE a.u <> b.v
-  AND NOT EXISTS (SELECT 1 FROM und d
-                  WHERE d.u = a.u AND d.v = b.v)
-GROUP BY a.u, b.v
-ORDER BY src, dst
-"""
-
-
-@register("kg_2hop_confidence", _TWOHOP_CONF_SQL)
-def kg_2hop_confidence(spark, sf_dir):
-    """2-hop inference candidates with path confidence: for every pair of
-    terms NOT directly connected (on the sparse >=330-co-occurrence
-    graph, the same projection kg_components_docs uses), the number of
-    length-2 paths between
-    them and the best path confidence (max over paths of the product of
-    the two edge confidences) — the link-prediction surface a KG-completion
-    pass ranks. max-of-products is aggregation-order-free (unlike a sum of
-    floats), and each product is one IEEE multiply of two already-rounded
-    doubles — identical in both engines. Plan: one triangle-style
-    self-join on the vocabulary projection + a left-anti against the edge
-    list (the oracle states it as NOT EXISTS; the engine uses the
-    decorrelated anti-join)."""
-    e = _cooc_edges(spark, sf_dir, min_cooc=330).select(
-        "term_a", "term_b",
-        F.round(F.least(F.lit(1.0), F.col("common") / F.lit(10.0)), 6)
-        .alias("conf"))
-    und = (e.select(F.col("term_a").alias("u"), F.col("term_b").alias("v"),
-                    "conf")
-           .unionByName(e.select(F.col("term_b").alias("u"),
-                                 F.col("term_a").alias("v"), "conf"))
-           ).persist()
-    a = und.select(F.col("u").alias("src"), F.col("v").alias("mid"),
-                   F.col("conf").alias("c1"))
-    b = und.select(F.col("u").alias("bmid"), F.col("v").alias("dst"),
-                   F.col("conf").alias("c2"))
-    direct = und.select(F.col("u").alias("du"), F.col("v").alias("dv"))
-    return (a.join(b, F.col("mid") == F.col("bmid"))
-            .filter(F.col("src") != F.col("dst"))
-            .join(direct, (F.col("src") == F.col("du"))
-                  & (F.col("dst") == F.col("dv")), "left_anti")
-            .groupBy("src", "dst")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_paths"),
-                 F.max(F.col("c1") * F.col("c2")).alias("best_conf"))
-            .orderBy("src", "dst"))
-
-
-_WAU_SQL = """
-WITH ud AS (
-  SELECT DISTINCT user_id, epoch_us(ts) // 86400000000 AS day FROM events
-), days AS (SELECT DISTINCT day FROM ud)
-SELECT CAST(days.day AS BIGINT) AS day,
-       CAST(count(DISTINCT ud.user_id) AS BIGINT) AS wau
-FROM days JOIN ud ON ud.day BETWEEN days.day - 6 AND days.day
-GROUP BY days.day
-ORDER BY day
-"""
-
-
-@register("q_events_wau", _WAU_SQL)
-def q_events_wau(spark, sf_dir):
-    """Weekly-active-users per day — COUNT(DISTINCT) over a 7-day SLIDING
-    window, which no engine supports as a window function. The scalable
-    rewrite: reduce to the distinct (user, day) activity set first (the
-    only data-sized step, one map-side-combinable distinct), then range-
-    join the tiny day axis against it ([d−6, d]) and count distinct per
-    day — each activity row lands in ≤7 day buckets, so the join output
-    is 7×|activity|, never |days|×|activity|. The same shape computes
-    MAU/stickiness with a wider band."""
-    e = _t(spark, sf_dir, "events")
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-    ud = e.select("user_id", day.alias("day")).distinct().persist()
-    days = ud.select(F.col("day").alias("d")).distinct()
-    return (days.join(ud, (F.col("day") >= F.col("d") - 6)
-                      & (F.col("day") <= F.col("d")))
-            .groupBy(F.col("d").cast("long").alias("day"))
-            .agg(F.countDistinct("user_id").cast("long").alias("wau"))
-            .orderBy("day"))
-
-
-_GSETS_SQL = """
-SELECT coalesce(event_type, '(all)') AS event_type,
-       CAST(coalesce(epoch_us(ts) // 86400000000 // 7, -1) AS BIGINT)
-         AS week,
-       CAST(grouping(event_type) * 2
-            + grouping(epoch_us(ts) // 86400000000 // 7) AS BIGINT)
-         AS grouping_id,
-       CAST(count(*) AS BIGINT) AS n
-FROM events
-GROUP BY GROUPING SETS ((event_type), (epoch_us(ts) // 86400000000 // 7),
-                        (event_type, epoch_us(ts) // 86400000000 // 7))
-ORDER BY grouping_id, event_type, week
-"""
-
-
-@register("q_events_grouping_sets", _GSETS_SQL)
-def q_events_grouping_sets(spark, sf_dir):
-    """Explicit GROUPING SETS with grouping_id flags — the OLAP construct
-    ROLLUP/CUBE (already covered) cannot express: exactly the three
-    groupings an events dashboard wants (per type, per week, per
-    type×week) and none of the others, with grouping() bits
-    disambiguating NULL-as-ALL from NULL-as-value. One expand + hash
-    aggregate; Spark's expand multiplies rows by the grouping count
-    BEFORE the partial aggregate, so each set still combines map-side."""
-    e = _t(spark, sf_dir, "events")
-    week = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000 div 7")
-    return (e.select("event_type", week.alias("wk"))
-            .groupingSets([["event_type"], ["wk"], ["event_type", "wk"]],
-                          "event_type", "wk")
-            .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                 (F.grouping("event_type") * 2 + F.grouping("wk"))
-                 .cast("long").alias("grouping_id"))
-            .select(F.coalesce("event_type", F.lit("(all)"))
-                    .alias("event_type"),
-                    F.coalesce(F.col("wk"), F.lit(-1)).cast("long")
-                    .alias("week"), "grouping_id", "n")
-            .orderBy("grouping_id", "event_type", "week"))
-
-
-_HELDOUT_LM_SQL = """
-WITH split AS (
-  SELECT doc_id, text,
-         CASE WHEN CAST(CAST(concat('0x', substr(md5(concat('split:42:',
-                CAST(doc_id AS VARCHAR))), 1, 16)) AS UBIGINT) % 10000
-                AS INTEGER) < 9000
-              THEN 'train' ELSE 'heldout' END AS split
-  FROM documents
-), words AS (
-  SELECT doc_id, split,
-         string_split_regex(trim(lower(text)), '\\s+') AS ws
-  FROM split
-), bi AS (
-  SELECT doc_id, split, z[1] AS w1, z[2] AS w2
-  FROM (SELECT doc_id, split, unnest(list_zip(ws, ws[2:])) AS z FROM words)
-  WHERE z[2] IS NOT NULL
-), c12 AS (SELECT w1, w2, count(*) AS c FROM bi
-           WHERE split = 'train' GROUP BY 1, 2),
-c1 AS (SELECT w1, count(*) AS c FROM bi WHERE split = 'train' GROUP BY 1),
-v AS (SELECT count(DISTINCT w) AS n FROM (
-  SELECT w1 AS w FROM bi WHERE split = 'train'
-  UNION SELECT w2 FROM bi WHERE split = 'train'))
-SELECT bi.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-       CAST(sum((coalesce(c12.c, 0) + 1) * 1000000000
-                // (coalesce(c1.c, 0) + v.n)) AS BIGINT) AS sum_score_e9,
-       CAST(sum((coalesce(c12.c, 0) + 1) * 1000000000
-                // (coalesce(c1.c, 0) + v.n)) // count(*) AS BIGINT)
-         AS avg_score_e9
-FROM bi
-LEFT JOIN c12 ON bi.w1 = c12.w1 AND bi.w2 = c12.w2
-LEFT JOIN c1 ON bi.w1 = c1.w1
-CROSS JOIN v
-WHERE bi.split = 'heldout'
-GROUP BY bi.doc_id
-ORDER BY doc_id
-"""
-
-
-@register("text_heldout_lm_score", _HELDOUT_LM_SQL)
-def text_heldout_lm_score(spark, sf_dir):
-    """Held-out LM evaluation — the honest version of text_doc_lm_score:
-    bigram counts come from the TRAIN split only (the md5 hash_split),
-    and the 10% held-out documents are scored under that model, with
-    unseen bigrams/contexts falling back to the add-one floor
-    (coalesce 0) — the train/eval separation a real perplexity filter
-    must respect or it leaks. Same floor-before-sum integer discipline;
-    left joins instead of inner because held-out n-grams may be unseen."""
-    d = _t(spark, sf_dir, "documents")
-    from .operators.text_analysis import hash_split
-    sp = hash_split(d).withColumn(
-        "split", F.when(F.col("split") == "train", "train")
-        .otherwise("heldout"))
-    ws = F.split(F.trim(F.lower("text")), r"\s+")
-    bi = (sp.select("doc_id", "split", ws.alias("ws"))
-          .select("doc_id", "split", F.explode(F.zip_with(
-              F.slice("ws", 1, F.greatest(F.size("ws") - 1, F.lit(0))),
-              F.slice("ws", 2, F.greatest(F.size("ws") - 1, F.lit(0))),
-              lambda a, b: F.struct(a.alias("w1"), b.alias("w2"))))
-              .alias("p"))
-          .select("doc_id", "split", "p.w1", "p.w2")).persist()
-    tr = bi.filter(F.col("split") == "train")
-    c12 = tr.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
-    c1 = tr.groupBy("w1").agg(F.count(F.lit(1)).alias("c1"))
-    vocab_n = (tr.select(F.col("w1").alias("w"))
-               .union(tr.select(F.col("w2").alias("w")))
-               .distinct().agg(F.count(F.lit(1)).alias("v")))
-    score = F.expr(
-        "((coalesce(c12, 0) + 1) * 1000000000L) div (coalesce(c1, 0) + v)")
-    return (bi.filter(F.col("split") == "heldout")
-            .join(c12, ["w1", "w2"], "left")
-            .join(c1, "w1", "left")
-            .crossJoin(F.broadcast(vocab_n))
-            .groupBy("doc_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_bigrams"),
-                 F.sum(score).cast("long").alias("sum_score_e9"))
-            .select("doc_id", "n_bigrams", "sum_score_e9",
-                    F.expr("sum_score_e9 div n_bigrams").cast("long")
-                    .alias("avg_score_e9"))
-            .orderBy("doc_id"))
-
-
-_QNORM_SQL = """
-WITH deciles AS (
-  SELECT 1 AS decile, percentile_disc(0.1) WITHIN GROUP (ORDER BY value) AS gv FROM events
-  UNION ALL
-  SELECT 2 AS decile, percentile_disc(0.2) WITHIN GROUP (ORDER BY value) AS gv FROM events
-  UNION ALL
-  SELECT 3 AS decile, percentile_disc(0.3) WITHIN GROUP (ORDER BY value) AS gv FROM events
-  UNION ALL
-  SELECT 4 AS decile, percentile_disc(0.4) WITHIN GROUP (ORDER BY value) AS gv FROM events
-  UNION ALL
-  SELECT 5 AS decile, percentile_disc(0.5) WITHIN GROUP (ORDER BY value) AS gv FROM events
-  UNION ALL
-  SELECT 6 AS decile, percentile_disc(0.6) WITHIN GROUP (ORDER BY value) AS gv FROM events
-  UNION ALL
-  SELECT 7 AS decile, percentile_disc(0.7) WITHIN GROUP (ORDER BY value) AS gv FROM events
-  UNION ALL
-  SELECT 8 AS decile, percentile_disc(0.8) WITHIN GROUP (ORDER BY value) AS gv FROM events
-  UNION ALL
-  SELECT 9 AS decile, percentile_disc(0.9) WITHIN GROUP (ORDER BY value) AS gv FROM events
-  UNION ALL
-  SELECT 10 AS decile, percentile_disc(1.0) WITHIN GROUP (ORDER BY value) AS gv FROM events
-), r AS (
-  SELECT event_id, user_id, value,
-         ntile(10) OVER (PARTITION BY user_id
-                         ORDER BY value, event_id) AS decile
-  FROM events
-)
-SELECT event_id, user_id, value, CAST(r.decile AS BIGINT) AS decile,
-       gv AS value_qnorm
-FROM r JOIN deciles ON r.decile = deciles.decile
-ORDER BY event_id
-"""
-
-
-@register("q_events_quantile_norm", _QNORM_SQL)
-def q_events_quantile_norm(spark, sf_dir):
-    """Quantile normalization — every user's values mapped onto the GLOBAL
-    distribution by rank: each row gets its within-user decile (total
-    order: value, event_id) and is replaced by the global decile boundary
-    value. Removes per-user scale differences while preserving each
-    user's ordering — the rank-based feature scaling that is immune to
-    outliers. All values pass through percentile_disc/ntile untouched
-    (no float arithmetic); the decile table is 10 rows broadcast onto a
-    single user-partitioned window."""
-    e = _t(spark, sf_dir, "events")
-    dec = e.agg(*[
-        F.expr(f"percentile_disc({d / 10.0}) WITHIN GROUP (ORDER BY value)")
-        .alias(f"g{d}") for d in range(1, 11)])
-    deciles = dec.select(F.explode(F.array(*[
-        F.struct(F.lit(d).cast("long").alias("gdec"),
-                 F.col(f"g{d}").alias("gv")) for d in range(1, 11)]))
-        .alias("x")).select("x.gdec", "x.gv")
-    w = Window.partitionBy("user_id").orderBy("value", "event_id")
-    r = e.select("event_id", "user_id", "value",
-                 F.ntile(10).over(w).cast("long").alias("decile"))
-    return (r.join(F.broadcast(deciles), r["decile"] == F.col("gdec"))
-            .select("event_id", "user_id", "value", "decile",
-                    F.col("gv").alias("value_qnorm"))
-            .orderBy("event_id"))
-
-
-_CALFILL_SQL = """
-WITH d AS (
-  SELECT epoch_us(ts) // 86400000000 AS day, count(*) AS n
-  FROM events GROUP BY 1
-), bounds AS (SELECT min(day) AS lo, max(day) AS hi FROM d),
-cal AS (SELECT unnest(generate_series(lo, hi)) AS day FROM bounds)
-SELECT CAST(cal.day AS BIGINT) AS day,
-       CAST(coalesce(n, 0) AS BIGINT) AS n_events,
-       CAST(n IS NULL AS BIGINT) AS is_gap,
-       CAST(cal.day % 7 AS BIGINT) AS dow
-FROM cal LEFT JOIN d ON cal.day = d.day
-ORDER BY day
-"""
-
-
-@register("q_events_calendar_fill", _CALFILL_SQL)
-def q_events_calendar_fill(spark, sf_dir):
-    """Calendar gap-filling: the COMPLETE day scaffold between the first
-    and last event (generated, not observed — F.sequence), left-joined
-    against daily counts so zero-activity days exist as rows with a gap
-    flag — the step every time-series model needs before lag features,
-    because 'no row' and 'zero events' are different facts. The scaffold
-    generation is O(span), data passes once."""
-    e = _t(spark, sf_dir, "events")
-    day = F.expr("unix_micros(cast(ts as timestamp)) div 86400000000")
-    d = e.groupBy(day.alias("day")).agg(F.count(F.lit(1)).alias("n"))
-    cal = (d.agg(F.min("day").alias("lo"), F.max("day").alias("hi"))
-           .select(F.explode(F.sequence("lo", "hi")).alias("cday")))
-    return (cal.join(d, F.col("cday") == F.col("day"), "left")
-            .select(F.col("cday").cast("long").alias("day"),
-                    F.coalesce("n", F.lit(0)).cast("long").alias("n_events"),
-                    F.col("n").isNull().cast("long").alias("is_gap"),
-                    (F.col("cday") % 7).cast("long").alias("dow"))
-            .orderBy("day"))
-
-
-_SRCSIM_SQL = """
-WITH w AS (
-  SELECT source, unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word
-  FROM documents
-), c AS (
-  SELECT source, word, count(*) AS n FROM w GROUP BY 1, 2
-), norms AS (
-  SELECT source, sum(CAST(n AS HUGEINT) * n) AS n2 FROM c GROUP BY 1
-), dots AS (
-  SELECT a.source AS src_a, b.source AS src_b,
-         sum(CAST(a.n AS HUGEINT) * b.n) AS dot
-  FROM c a JOIN c b ON a.word = b.word AND a.source < b.source
-  GROUP BY 1, 2
-)
-SELECT src_a, src_b, CAST(dot AS BIGINT) AS dot,
-       CAST(dot * dot * 1000000 // (na.n2 * nb.n2) AS BIGINT) AS cos2_e6
-FROM dots
-JOIN norms na ON na.source = src_a
-JOIN norms nb ON nb.source = src_b
-ORDER BY src_a, src_b
-"""
-
-
-@register("text_source_similarity", _SRCSIM_SQL)
-def text_source_similarity(spark, sf_dir):
-    """Pairwise similarity between SOURCES' unigram distributions — the
-    corpus-drift / domain-overlap measure mixture builders read before
-    setting sampling weights. Cosine² is reported instead of cosine:
-    dot²·10⁶ div (‖a‖²·‖b‖²) needs no square root, so the whole measure
-    stays in exact integer arithmetic (cos² is monotone in cos for
-    non-negative counts — same ranking), carried in decimal(38,0)/HUGEINT
-    because dot² overflows a BIGINT beyond ~10⁹·10⁹ count mass. The count vectors live on the
-    word-keyed join (vocabulary-bounded); sources² pairs are tiny."""
-    d = _t(spark, sf_dir, "documents")
-    ws = F.split(F.trim(F.lower("text")), r"\s+")
-    c = (d.select("source", F.explode(ws).alias("word"))
-         .groupBy("source", "word").agg(F.count(F.lit(1)).alias("n"))
-         ).persist()
-    norms = c.groupBy("source").agg(
-        F.sum(F.col("n").cast("decimal(38,0)") * F.col("n")).alias("n2"))
-    a = c.select(F.col("source").alias("src_a"), "word",
-                 F.col("n").alias("na"))
-    b = c.select(F.col("source").alias("src_b"), "word",
-                 F.col("n").alias("nb"))
-    dots = (a.join(b, "word")
-            .filter(F.col("src_a") < F.col("src_b"))
-            .groupBy("src_a", "src_b")
-            .agg(F.sum(F.col("na").cast("decimal(38,0)") * F.col("nb"))
-                 .alias("dot")))
-    return (dots.join(F.broadcast(norms.withColumnRenamed("source", "sa")
-                                  .withColumnRenamed("n2", "na2")),
-                      F.col("src_a") == F.col("sa"))
-            .join(F.broadcast(norms.withColumnRenamed("source", "sb")
-                              .withColumnRenamed("n2", "nb2")),
-                  F.col("src_b") == F.col("sb"))
-            .select("src_a", "src_b", F.col("dot").cast("long").alias("dot"),
-                    F.expr("(dot * dot * 1000000) div (na2 * nb2)")
-                    .cast("long").alias("cos2_e6"))
-            .orderBy("src_a", "src_b"))
-
-
-_HHI_SQL = """
-WITH cents AS (
-  SELECT c_nationkey, o_custkey,
-         sum(CAST(floor(o_totalprice * 100 + 0.5) AS HUGEINT)) AS c
-  FROM orders JOIN customer ON c_custkey = o_custkey
-  GROUP BY 1, 2
-)
-SELECT CAST(c_nationkey AS BIGINT) AS nationkey,
-       CAST(count(*) AS BIGINT) AS n_customers,
-       CAST(sum(c * c) * 100000000 // (sum(c) * sum(c)) AS BIGINT)
-         AS hhi_e8
-FROM cents GROUP BY 1 ORDER BY nationkey
-"""
-
-
-@register("q_orders_hhi", _HHI_SQL)
-def q_orders_hhi(spark, sf_dir):
-    """Herfindahl–Hirschman concentration index of order revenue per
-    customer nation: Σ share² as the exact integer ⌊Σc² · 10⁸ / (Σc)²⌋
-    over customer revenue in CENTS — 10⁸/n_customers (perfect equality)
-    up to 10⁸ (monopoly customer). The revenue-concentration statistic a
-    marketplace-health dashboard tracks. Cents via the same double
-    multiply+floor in both engines; squares and ratios in decimal(38,0)/
-    HUGEINT so the math survives any scale factor. Two map-side-
-    combinable aggregates, keys bounded by customers then nations."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    cents = (o.join(F.broadcast(c),
-                    F.col("c_custkey") == F.col("o_custkey"))
-             .groupBy("c_nationkey", "o_custkey")
-             .agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-                        .cast("decimal(38,0)")).alias("c")))
-    return (cents.groupBy("c_nationkey")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_customers"),
-                 F.sum(F.col("c") * F.col("c")).alias("s2"),
-                 F.sum("c").alias("s1"))
-            .select(F.col("c_nationkey").cast("long").alias("nationkey"),
-                    "n_customers",
-                    F.expr("CAST((s2 * 100000000) div (s1 * s1) AS BIGINT)")
-                    .alias("hhi_e8"))
-            .orderBy("nationkey"))
-
-
-_LATEST_K_SQL = """
-SELECT user_id,
-       (list(event_id ORDER BY ts DESC, event_id DESC))[1:5] AS recent_ids,
-       CAST(least(count(*), 5) AS BIGINT) AS n_recent
-FROM events GROUP BY user_id ORDER BY user_id
-"""
-
-
-@register("q_events_latest_k", _LATEST_K_SQL)
-def q_events_latest_k(spark, sf_dir):
-    """Latest-K history per user — the feature-store 'recent activity'
-    array (last 5 event ids, newest first) every sequence model and
-    session-based recommender reads. One groupBy-user array build; the
-    per-user sort is bounded by user activity, and at scale the cap
-    happens inside the aggregate (slice after array_sort), never by
-    materializing full histories."""
-    e = _t(spark, sf_dir, "events")
-    item = F.struct(F.col("ts"), F.col("event_id"))
-    return (e.groupBy("user_id")
-            .agg(F.slice(F.reverse(F.array_sort(F.collect_list(item))),
-                         1, 5).alias("srt"))
-            .select("user_id",
-                    F.transform(F.col("srt"), lambda x: x["event_id"])
-                    .alias("recent_ids"),
-                    F.size("srt").cast("long").alias("n_recent"))
-            .orderBy("user_id"))
-
-
-_ROLLMED_SQL = """
-WITH w AS (
-  SELECT event_id, user_id, value,
-         list(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                           ROWS BETWEEN 6 PRECEDING AND CURRENT ROW) AS win
-  FROM events
-)
-SELECT event_id, user_id, value,
-       list_sort(win)[(len(win) + 1) // 2] AS median7
-FROM w ORDER BY event_id
-"""
-
-
-@register("q_events_rolling_median", _ROLLMED_SQL)
-def q_events_rolling_median(spark, sf_dir):
-    """Rolling 7-event median per user — the robust smoother a metrics
-    pipeline uses where a rolling MEAN would chase outliers. No engine
-    has a median window function; the rewrite collects the bounded
-    7-row frame as an array and takes the lower-median element — values
-    pass through untouched (selection, not interpolation), so the result
-    is exact in both engines. Frame size bounds the per-row array at 7
-    regardless of data size."""
-    e = _t(spark, sf_dir, "events")
-    w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
-         .rowsBetween(-6, 0))
-    win = F.array_sort(F.collect_list("value").over(w))
-    return (e.select("event_id", "user_id", "value", win.alias("win"))
-            .select("event_id", "user_id", "value",
-                    F.element_at("win", ((F.size("win") + 1) / 2)
-                                 .cast("int")).alias("median7"))
-            .orderBy("event_id"))
-
-
-_PIVOT_SQL = """
-SELECT user_id,
-       CAST(count(*) FILTER (WHERE event_type = 'view') AS BIGINT) AS n_view,
-       CAST(count(*) FILTER (WHERE event_type = 'click') AS BIGINT) AS n_click,
-       CAST(count(*) FILTER (WHERE event_type = 'purchase') AS BIGINT)
-         AS n_purchase,
-       CAST(count(*) FILTER (WHERE event_type = 'signup') AS BIGINT)
-         AS n_signup,
-       CAST(count(*) FILTER (WHERE event_type = 'error') AS BIGINT) AS n_error
-FROM events GROUP BY user_id ORDER BY user_id
-"""
-
-
-@register("q_events_pivot_wide", _PIVOT_SQL)
-def q_events_pivot_wide(spark, sf_dir):
-    """Long→wide reshaping through Spark's pivot API: per-user event-type
-    counts as five typed columns — the feature-matrix layout model
-    trainers consume. The pivot values are EXPLICIT (the closed
-    event-type vocabulary), which at scale skips the extra distinct-values
-    job Spark otherwise runs, and the pivot compiles to the same
-    single-pass conditional aggregation the oracle states."""
-    e = _t(spark, sf_dir, "events")
-    types = ["view", "click", "purchase", "signup", "error"]
-    p = (e.groupBy("user_id")
-         .pivot("event_type", types)
-         .agg(F.count(F.lit(1))))
-    return (p.select("user_id",
-                     *[F.coalesce(F.col(t), F.lit(0)).cast("long")
-                       .alias(f"n_{t}") for t in types])
-            .orderBy("user_id"))
-
-
-_SKEW_SQL = """
-WITH k AS (
-  SELECT l_partkey AS key, count(*) AS n FROM lineitem GROUP BY 1
-), s AS (
-  SELECT max(n) AS mx, sum(n) AS total, count(*) AS n_keys FROM k
-)
-SELECT CAST(key AS BIGINT) AS key, CAST(n AS BIGINT) AS n,
-       CAST(n * n_keys * 1000000 // total AS BIGINT) AS skew_factor_e6,
-       CAST(row_number() OVER (ORDER BY n DESC, key) AS BIGINT) AS rnk
-FROM k, s
-ORDER BY n DESC, key
-LIMIT 10
-"""
-
-
-@register("q_skew_report", _SKEW_SQL)
-def q_skew_report(spark, sf_dir):
-    """Join-key skew report — the diagnostic run BEFORE a big join to
-    decide salting/AQE-skew thresholds: the 10 heaviest l_partkey values
-    with their exact ×10⁶ skew factor (count ÷ mean count = how many
-    average keys' worth of rows hit one reducer). skew_factor 1e6 =
-    perfectly uniform; the salting machinery in materialize.py exists
-    because this number is routinely 100× on co-occurrence keys. One
-    map-side-combinable count + a 1-row stats broadcast + top-10."""
-    li = _t(spark, sf_dir, "lineitem")
-    k = li.groupBy(F.col("l_partkey").alias("key")).agg(
-        F.count(F.lit(1)).alias("n"))
-    s = k.agg(F.sum("n").alias("total"),
-              F.count(F.lit(1)).alias("n_keys"))
-    w = Window.orderBy(F.desc("n"), "key")
-    return (k.crossJoin(F.broadcast(s))
-            .select(F.col("key").cast("long").alias("key"),
-                    F.col("n").cast("long").alias("n"),
-                    F.expr("n * n_keys * 1000000L div total").cast("long")
-                    .alias("skew_factor_e6"))
-            .withColumn("rnk", F.row_number().over(w).cast("long"))
-            .filter(F.col("rnk") <= 10)
-            .orderBy(F.desc("n"), "key"))
-
-
-# One query whose TEXT is the artifact: the same ANSI string runs
-# unmodified through spark.sql() AND DuckDB — exercising the SQL entry
-# point (everything else in the registry uses the DataFrame API) and
-# pinning that the engine's SQL dialect honors the common subset.
-_SQL_API_TEXT = """
-SELECT CAST(year(l_shipdate) * 100 + month(l_shipdate) AS BIGINT)
-         AS ship_month,
-       CAST(count(*) AS BIGINT) AS n_lines,
-       round(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))
-                      * (1 - CAST(l_discount AS DECIMAL(18,4))))
-                  AS DOUBLE), 2) AS revenue
-FROM lineitem
-WHERE l_returnflag = 'R'
-GROUP BY year(l_shipdate) * 100 + month(l_shipdate)
-ORDER BY ship_month
-"""
-
-
-@register("q_sql_api_monthly_returns", _SQL_API_TEXT)
-def q_sql_api_monthly_returns(spark, sf_dir):
-    """Returned-line revenue by ship month, submitted as SQL TEXT through
-    spark.sql() over a temp view — the literally-same string the DuckDB
-    oracle runs, so the hash match certifies dialect-compatible semantics
-    (year/month, decimal casts, group-by-expression) across the SQL entry
-    point, not just the DataFrame API. Catalyst compiles it to the same
-    pushed-filter scan + hash aggregate the DataFrame form would get."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    return spark.sql(_SQL_API_TEXT)
-
-
-_MAP_ROUNDTRIP_SQL = """
-WITH c AS (
-  SELECT user_id, event_type, count(*) AS n
-  FROM events GROUP BY 1, 2
-)
-SELECT user_id, event_type, CAST(n AS BIGINT) AS n
-FROM c WHERE n >= 5
-ORDER BY user_id, event_type
-"""
-
-
-@register("q_events_map_roundtrip", _MAP_ROUNDTRIP_SQL)
-def q_events_map_roundtrip(spark, sf_dir):
-    """MapType round-trip: per-user event-type counts packed into a MAP
-    column (map_from_entries), thresholded with map_filter, and exploded
-    back to rows — the schema shape feature stores use for sparse
-    per-entity counters, exercised end-to-end through Spark's map
-    higher-order functions. The oracle states the equivalent relational
-    filter; the hash match proves pack→filter→unpack loses nothing. Map
-    internals never surface in the output (map iteration order is
-    engine-defined), only the exploded rows with a total order."""
-    e = _t(spark, sf_dir, "events")
-    c = e.groupBy("user_id", "event_type").agg(
-        F.count(F.lit(1)).alias("n"))
-    packed = (c.groupBy("user_id")
-              .agg(F.map_from_entries(
-                  F.array_sort(F.collect_list(F.struct("event_type", "n"))))
-                  .alias("m")))
-    filtered = packed.select(
-        "user_id", F.map_filter("m", lambda k, v: v >= 5).alias("m"))
-    return (filtered.select("user_id", F.explode("m")
-                            .alias("event_type", "n"))
-            .select("user_id", "event_type", F.col("n").cast("long")
-                    .alias("n"))
-            .orderBy("user_id", "event_type"))
-
-
-# The same ANSI text runs through spark.sql() and DuckDB: NOT IN against a
-# subquery CONTAINING NULLS is three-valued — every candidate compares
-# UNKNOWN against the NULL member, so the naive form returns ZERO rows, and
-# the correct form must filter the NULLs first. Both engines implement this
-# with a null-aware anti join; getting it wrong silently drops or keeps
-# everything.
-_NULL_NOT_IN_TEXT = """
-WITH probed AS (
-  SELECT CASE WHEN o_orderstatus = 'P' THEN NULL ELSE o_custkey END AS k
-  FROM orders
-)
-SELECT
-  (SELECT count(*) FROM customer
-   WHERE c_custkey NOT IN (SELECT k FROM probed)) AS naive_not_in,
-  (SELECT count(*) FROM customer
-   WHERE c_custkey NOT IN (SELECT k FROM probed WHERE k IS NOT NULL))
-    AS filtered_not_in,
-  (SELECT count(*) FROM customer) AS n_customers
-"""
-
-
-@register("q_null_aware_not_in", _NULL_NOT_IN_TEXT)
-def q_null_aware_not_in(spark, sf_dir):
-    """Null-aware NOT IN semantics, pinned: the subquery deliberately
-    contains NULLs, so the naive NOT IN must return 0 (three-valued
-    logic: x <> NULL is UNKNOWN) while the IS-NOT-NULL-filtered form
-    returns the real anti-join count. Submitted as the same SQL text to
-    both engines — Spark plans the naive branch as a null-aware anti
-    join (the expensive operator the optimizer reserves for exactly this
-    trap), and the hash match certifies both engines agree on the
-    standard's least intuitive corner."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    df = spark.sql(_NULL_NOT_IN_TEXT)
-    return df.select(*[F.col(c).cast("long").alias(c)
-                       for c in df.columns])
-
-
-_CORPUS_CARD_SQL = """
-WITH w AS (
-  SELECT doc_id, source, lang,
-         string_split_regex(trim(lower(text)), '\\s+') AS ws,
-         md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS fp
-  FROM documents
-), types AS (
-  SELECT count(DISTINCT word) AS n_types
-  FROM (SELECT unnest(ws) AS word FROM w)
-), dups AS (
-  SELECT count(*) AS n_groups, sum(cnt - 1) AS n_redundant
-  FROM (SELECT fp, count(*) AS cnt FROM w GROUP BY fp)
-)
-SELECT CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(len(ws)) AS BIGINT) AS n_tokens,
-       CAST((SELECT n_types FROM types) AS BIGINT) AS n_types,
-       CAST(count(DISTINCT source) AS BIGINT) AS n_sources,
-       CAST(count(DISTINCT lang) AS BIGINT) AS n_langs,
-       CAST((SELECT n_groups FROM dups) AS BIGINT) AS exact_dup_groups,
-       CAST((SELECT n_redundant FROM dups) * 1000000 // count(*) AS BIGINT)
-         AS dup_rate_e6,
-       CAST(min(len(ws)) AS BIGINT) AS min_tokens,
-       CAST(max(len(ws)) AS BIGINT) AS max_tokens
-FROM w
-"""
-
-
-@register("data_corpus_card", _CORPUS_CARD_SQL)
-def data_corpus_card(spark, sf_dir):
-    """The one-row dataset card: corpus size, token mass, vocabulary,
-    source/language spread, exact-duplicate groups and redundancy rate,
-    token-length extremes — the header block of a training-data datasheet
-    (Datasheets for Datasets, Gebru et al.), computed from the same
-    fingerprint/tokenization primitives the dedup and stats queries use
-    so the card can never disagree with the pipeline. One pass + tiny
-    aggregates; every number is an exact integer."""
-    d = _t(spark, sf_dir, "documents")
-    ws = F.split(F.trim(F.lower("text")), r"\s+")
-    fp = F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))),
-                                r"\s+", " "))
-    w = d.select("doc_id", "source", "lang", ws.alias("ws"),
-                 fp.alias("fp")).persist()
-    types = (w.select(F.explode("ws").alias("word"))
-             .agg(F.countDistinct("word").alias("n_types")))
-    dups = (w.groupBy("fp").agg(F.count(F.lit(1)).alias("cnt"))
-            .agg(F.count(F.lit(1)).alias("n_groups"),
-                 F.sum(F.col("cnt") - 1).alias("n_redundant")))
-    base = w.agg(
-        F.count(F.lit(1)).cast("long").alias("n_docs"),
-        F.sum(F.size("ws")).cast("long").alias("n_tokens"),
-        F.countDistinct("source").cast("long").alias("n_sources"),
-        F.countDistinct("lang").cast("long").alias("n_langs"),
-        F.min(F.size("ws")).cast("long").alias("min_tokens"),
-        F.max(F.size("ws")).cast("long").alias("max_tokens"))
-    return (base.crossJoin(F.broadcast(types))
-            .crossJoin(F.broadcast(dups))
-            .select("n_docs", "n_tokens",
-                    F.col("n_types").cast("long").alias("n_types"),
-                    "n_sources", "n_langs",
-                    F.col("n_groups").cast("long").alias("exact_dup_groups"),
-                    F.expr("n_redundant * 1000000L div n_docs").cast("long")
-                    .alias("dup_rate_e6"),
-                    "min_tokens", "max_tokens"))
-
-
-_OLS_TREND_SQL = """
-WITH d AS (
-  SELECT event_type,
-         CAST(epoch_us(ts) // 1000000 AS HUGEINT) - 1704067200 AS x,
-         CAST(floor("value" * 100 + 0.5) AS HUGEINT) AS y
-  FROM events
-), s AS (
-  SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-         sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx
-  FROM d GROUP BY 1
-)
-SELECT event_type, CAST(n AS BIGINT) AS n,
-       CAST(((n * sxy - sx * sy) * 1000000000)
-            // (n * sxx - sx * sx) AS BIGINT) AS slope_e9,
-       CAST(((sy * sxx - sx * sxy) * 1000000)
-            // (n * sxx - sx * sx) AS BIGINT) AS intercept_e6
-FROM s ORDER BY event_type
-"""
-
-
-@register("q_events_ols_trend", _OLS_TREND_SQL)
-def q_events_ols_trend(spark, sf_dir):
-    """Exact closed-form OLS of event value on time, per event type — the
-    trend detector a metrics pipeline runs before alerting on drift. Five
-    map-side-combinable integer sums (n, Σx, Σy, Σxy, Σx²) in
-    decimal(38,0)/HUGEINT, then slope = (nΣxy−ΣxΣy)/(nΣx²−(Σx)²) and
-    intercept = (ΣyΣx²−ΣxΣxy)/den emitted as e9/e6 fixed-point — no
-    float sum ever forms, so the result is order-independent and
-    hash-exact. x is epoch seconds offset from 2024-01-01 (Spark's
-    timestamp→long cast floors micros exactly like DuckDB's
-    epoch_us//1e6); y is value in cents. Overflow bound: |ΣyΣx²·10⁶| at
-    10¹⁰ rows of 30-day data ≈ 10³⁶ < 10³⁸. Both `div` (Spark) and `//`
-    (DuckDB) truncate toward zero, so negative slopes agree. One shuffle
-    on a 5-key column; the scan is the cost at any scale."""
-    e = _t(spark, sf_dir, "events")
-    # ts is TIMESTAMP_NTZ; session tz pinned UTC, unix_micros div 1e6
-    # floors exactly like the oracle's epoch_us // 1e6 (never the
-    # rounding epoch()-cast — see q_events_interval_overlap)
-    d = e.select(
-        "event_type",
-        (F.expr("unix_micros(cast(ts as timestamp)) div 1000000")
-         - F.lit(1704067200)).cast("decimal(38,0)").alias("x"),
-        F.floor(F.col("value") * 100 + F.lit(0.5))
-        .cast("decimal(38,0)").alias("y"))
-    s = d.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-        F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"))
-    return (s.select(
-        "event_type", F.col("n").cast("long").alias("n"),
-        F.expr("CAST(((n * sxy - sx * sy) * 1000000000)"
-               " div (n * sxx - sx * sx) AS BIGINT)").alias("slope_e9"),
-        F.expr("CAST(((sy * sxx - sx * sxy) * 1000000)"
-               " div (n * sxx - sx * sx) AS BIGINT)").alias("intercept_e6"))
-        .orderBy("event_type"))
-
-
-_BENFORD_SQL = """
-WITH c AS (
-  SELECT CAST(floor("value" * 100 + 0.5) AS BIGINT) AS cents
-  FROM events WHERE "value" > 0
-), d AS (
-  SELECT CAST(substr(CAST(cents AS VARCHAR), 1, 1) AS BIGINT) AS digit
-  FROM c WHERE cents > 0
-), g AS (
-  SELECT digit, CAST(count(*) AS HUGEINT) AS n FROM d GROUP BY 1
-)
-SELECT digit, CAST(n AS BIGINT) AS n,
-       CAST(n * 1000000 // sum(n) OVER () AS BIGINT) AS pct_e6,
-       CAST(CASE digit WHEN 1 THEN 301030 WHEN 2 THEN 176091
-            WHEN 3 THEN 124939 WHEN 4 THEN 96910 WHEN 5 THEN 79181
-            WHEN 6 THEN 66947 WHEN 7 THEN 57992 WHEN 8 THEN 51153
-            WHEN 9 THEN 45757 END AS BIGINT) AS benford_e6
-FROM g ORDER BY digit
-"""
-
-
-@register("q_events_benford", _BENFORD_SQL)
-def q_events_benford(spark, sf_dir):
-    """Benford first-significant-digit audit of the value column — the
-    classic fabricated-/synthetic-data smell test a data-quality gate
-    runs on monetary fields. Values to integer cents (same double
-    multiply+floor in both engines), leading digit from the decimal
-    string, counts per digit, observed share as e6 fixed-point against
-    the hardcoded Benford expectation round(log10(1+1/d)·10⁶) — the nine
-    constants are literals in BOTH engines so no cross-engine libm log
-    enters the hash. One 9-key aggregate after the scan; the post-agg
-    total is a 9-row window, never a driver collect."""
-    e = _t(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    d = (e.filter(F.col("value") > 0)
-         .select(cents.alias("cents")).filter(F.col("cents") > 0)
-         .select(F.substring(F.col("cents").cast("string"), 1, 1)
-                 .cast("long").alias("digit")))
-    g = d.groupBy("digit").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"))
-    w = Window.partitionBy()
-    return (g.withColumn("total", F.sum("n").over(w))
-            .select("digit", F.col("n").cast("long").alias("n"),
-                    F.expr("CAST(n * 1000000 div total AS BIGINT)")
-                    .alias("pct_e6"),
-                    F.expr(
-                        "CAST(CASE digit WHEN 1 THEN 301030"
-                        " WHEN 2 THEN 176091 WHEN 3 THEN 124939"
-                        " WHEN 4 THEN 96910 WHEN 5 THEN 79181"
-                        " WHEN 6 THEN 66947 WHEN 7 THEN 57992"
-                        " WHEN 8 THEN 51153 WHEN 9 THEN 45757 END"
-                        " AS BIGINT)").alias("benford_e6"))
-            .orderBy("digit"))
-
-
-_UNIGRAM_DRIFT_SQL = """
-WITH w AS (
-  SELECT lang, doc_id % 2 AS half,
-         unnest(string_split_regex(trim(lower(text)), '\\s+')) AS word
-  FROM documents
-), c AS (
-  SELECT lang, word,
-         CAST(sum(CASE WHEN half = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS ca,
-         CAST(sum(CASE WHEN half = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS cb
-  FROM w GROUP BY 1, 2
-), n AS (
-  SELECT lang, sum(ca) AS na, sum(cb) AS nb FROM c GROUP BY 1
-)
-SELECT c.lang, CAST(count(*) AS BIGINT) AS n_words,
-       CAST(n.na AS BIGINT) AS tokens_a, CAST(n.nb AS BIGINT) AS tokens_b,
-       CAST(sum(abs(ca * n.nb - cb * n.na)) * 1000000
-            // (2 * n.na * n.nb) AS BIGINT) AS tv_e6
-FROM c JOIN n ON c.lang = n.lang
-WHERE n.na > 0 AND n.nb > 0
-GROUP BY c.lang, n.na, n.nb ORDER BY c.lang
-"""
-
-
-@register("text_unigram_drift", _UNIGRAM_DRIFT_SQL)
-def text_unigram_drift(spark, sf_dir):
-    """Distribution-shift monitor: total-variation distance between the
-    unigram distributions of two deterministic corpus halves (doc_id
-    parity), per language — the drift alarm a training-data pipeline
-    fires before a new crawl snapshot changes the mixture. TV as the
-    exact rational Σ|c_a·N_b − c_b·N_a| / (2·N_a·N_b) in
-    decimal(38,0)/HUGEINT — 0 for identical distributions, 10⁶ for
-    disjoint vocabularies — so the hash never sees a float. The count
-    matrix is vocabulary×lang-keyed (bounded by the corpus vocabulary,
-    not the token mass); the totals join is a broadcast. Languages with
-    an empty half are excluded in both engines."""
-    d = _t(spark, sf_dir, "documents")
-    w = d.select("lang", (F.col("doc_id") % 2).alias("half"),
-                 F.explode(F.split(F.trim(F.lower("text")), r"\s+"))
-                 .alias("word"))
-    c = w.groupBy("lang", "word").agg(
-        F.sum(F.when(F.col("half") == 0, 1).otherwise(0))
-        .cast("decimal(38,0)").alias("ca"),
-        F.sum(F.when(F.col("half") == 1, 1).otherwise(0))
-        .cast("decimal(38,0)").alias("cb"))
-    n = c.groupBy("lang").agg(F.sum("ca").alias("na"),
-                              F.sum("cb").alias("nb"))
-    return (c.join(F.broadcast(n), "lang")
-            .filter((F.col("na") > 0) & (F.col("nb") > 0))
-            .groupBy("lang", "na", "nb")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_words"),
-                 F.sum(F.abs(F.col("ca") * F.col("nb")
-                             - F.col("cb") * F.col("na"))).alias("sad"))
-            .select("lang", "n_words",
-                    F.col("na").cast("long").alias("tokens_a"),
-                    F.col("nb").cast("long").alias("tokens_b"),
-                    F.expr("CAST(sad * 1000000 div (2 * na * nb)"
-                           " AS BIGINT)").alias("tv_e6"))
-            .orderBy("lang"))
-
-
-_KMEANS_ASSIGN_SQL = """
-WITH ix AS (
-  SELECT vec_id, embedding,
-         unnest(range(1, len(embedding) + 1)) AS i
-  FROM embeddings
-), v AS (
-  SELECT vec_id, i,
-         CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000 + 0.5)
-              AS HUGEINT) AS q
-  FROM ix
-), c AS (
-  SELECT vec_id AS cid, i, q AS cq FROM v WHERE vec_id < 8
-), d AS (
-  SELECT v.vec_id, c.cid, sum((v.q - c.cq) * (v.q - c.cq)) AS d2
-  FROM v JOIN c USING (i) GROUP BY 1, 2
-), a AS (
-  SELECT vec_id, cid, d2,
-         row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-  FROM d
-)
-SELECT CAST(cid AS BIGINT) AS cluster, CAST(count(*) AS BIGINT) AS size,
-       CAST(sum(d2) // (count(*) * 1000000) AS BIGINT) AS msd_e6
-FROM a WHERE rn = 1 GROUP BY cid ORDER BY cluster
-"""
-
-
-@register("ann_kmeans_assign", _KMEANS_ASSIGN_SQL)
-def ann_kmeans_assign(spark, sf_dir):
-    """One Lloyd assignment step of k-means over the embedding table —
-    the building block of distributed k-means (and of IVF list
-    training, similarity.py's ivf_topk). Centroids are the k=8
-    smallest-id vectors (deterministic seed); every vector goes to its
-    nearest centroid by squared L2 over e6-QUANTIZED integer coordinates
-    (same float→double→floor in both engines), so distances, argmin
-    tie-breaks (then smallest centroid id) and per-cluster mean squared
-    distance are exact integer arithmetic — order-independent, no
-    cross-engine float summation. Spark side stays array-shaped: the
-    corpus never explodes — zip_with/aggregate compute each distance
-    inside the row against the BROADCAST 8-row centroid table (the
-    oracle unnests because DuckDB lacks positional zip; at scale the
-    array form is the one that matters). Cost: |corpus|·k narrow rows,
-    one k-key aggregate."""
-    embs = _t(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * 1000000 + F.lit(0.5))
-        .cast("decimal(38,0)"))
-    v = embs.select("vec_id", qv.alias("q"))
-    cents = (v.filter(F.col("vec_id") < 8)
-             .select(F.col("vec_id").alias("cid"), F.col("q").alias("cq")))
-    d2 = (v.crossJoin(F.broadcast(cents))
-          .select("vec_id", "cid",
-                  F.aggregate(
-                      F.zip_with("q", "cq", lambda a, b: (a - b) * (a - b)),
-                      F.lit(0).cast("decimal(38,0)"),
-                      lambda acc, x: acc + x).alias("d2")))
-    asg = (d2.groupBy("vec_id")
-           .agg(F.min(F.struct(F.col("d2"), F.col("cid"))).alias("m"))
-           .select(F.col("m.cid").alias("cluster"), F.col("m.d2").alias("d2")))
-    return (asg.groupBy("cluster")
-            .agg(F.count(F.lit(1)).cast("long").alias("size"),
-                 F.sum("d2").alias("sd2"))
-            .select(F.col("cluster").cast("long").alias("cluster"), "size",
-                    F.expr("CAST(sd2 div (size * 1000000) AS BIGINT)")
-                    .alias("msd_e6"))
-            .orderBy("cluster"))
-
-
-_RECENCY_SQL = """
-WITH m AS (SELECT max(CAST(ts AS DATE)) AS mx FROM events),
-d AS (
-  SELECT event_type,
-         least(date_diff('day', CAST(ts AS DATE), m.mx) // 7, 20) AS b
-  FROM events, m
-), g AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n_events,
-         CAST(sum(1000000 >> b) AS HUGEINT) AS w
-  FROM d GROUP BY 1
-)
-SELECT event_type, n_events, CAST(w AS BIGINT) AS decayed_weight_e6,
-       CAST(w * 1000000 // sum(w) OVER () AS BIGINT) AS share_e6
-FROM g ORDER BY event_type
-"""
-
-
-@register("q_events_recency_weights", _RECENCY_SQL)
-def q_events_recency_weights(spark, sf_dir):
-    """Recency-half-life sampling weights per event type — the freshness
-    bias a training-data mixer applies so week-old interactions count
-    double vs fortnight-old ones. Exact integer decay: age in whole days
-    from the corpus max date, 7-day half-life buckets, weight
-    10⁶ >> bucket (floor(10⁶/2^b), identical bit-shift in both engines,
-    bucket capped at 20 so the shift is always defined), then per-type
-    totals and e6 normalized shares via a post-agg window over ≤5 rows.
-    The max-date is a broadcast scalar; one 5-key aggregate after the
-    scan — same plan at any corpus age span."""
-    e = _t(spark, sf_dir, "events")
-    m = e.agg(F.max(F.to_date("ts")).alias("mx"))
-    d = (e.crossJoin(F.broadcast(m))
-         .select("event_type",
-                 F.least(F.floor(F.datediff(F.col("mx"), F.to_date("ts"))
-                                 / 7).cast("int"), F.lit(20)).alias("b")))
-    g = d.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum(F.expr("shiftright(1000000, b)"))
-        .cast("decimal(38,0)").alias("w"))
-    win = Window.partitionBy()
-    return (g.withColumn("tot", F.sum("w").over(win))
-            .select("event_type", "n_events",
-                    F.col("w").cast("long").alias("decayed_weight_e6"),
-                    F.expr("CAST(w * 1000000 div tot AS BIGINT)")
-                    .alias("share_e6"))
-            .orderBy("event_type"))
-
-
-_SIMPSON_SQL = """
-WITH c AS (
-  SELECT user_id, event_type, CAST(count(*) AS HUGEINT) AS c
-  FROM events GROUP BY 1, 2
-), s AS (
-  SELECT user_id, sum(c) AS n, CAST(count(*) AS BIGINT) AS n_types,
-         sum(c * c) AS sc2
-  FROM c GROUP BY 1
-)
-SELECT user_id, CAST(n AS BIGINT) AS n_events, n_types,
-       CAST((n * n - sc2) * 1000000 // (n * n) AS BIGINT) AS simpson_e6
-FROM s ORDER BY user_id
-"""
-
-
-@register("q_events_simpson_diversity", _SIMPSON_SQL)
-def q_events_simpson_diversity(spark, sf_dir):
-    """Gini–Simpson behavioral diversity per user: 1 − Σ(cₜ/N)² over the
-    user's event-type histogram — the interaction-breadth feature a
-    personalization model reads (0 = single-type user, →1 = uniform
-    across types). Unlike Shannon entropy this needs NO logarithm, so
-    the exact rational (N²−Σc²)·10⁶ div N² stays in integer arithmetic
-    and hashes identically across engines. Two stacked
-    map-side-combinable aggregates, keyed (user,type) then user —
-    partial aggregation absorbs the per-user fan-in at any scale."""
-    e = _t(spark, sf_dir, "events")
-    c = (e.groupBy("user_id", "event_type")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("c")))
-    s = (c.groupBy("user_id")
-         .agg(F.sum("c").alias("n"),
-              F.count(F.lit(1)).cast("long").alias("n_types"),
-              F.sum(F.col("c") * F.col("c")).alias("sc2")))
-    return (s.select("user_id", F.col("n").cast("long").alias("n_events"),
-                     "n_types",
-                     F.expr("CAST((n * n - sc2) * 1000000 div (n * n)"
-                            " AS BIGINT)").alias("simpson_e6"))
-            .orderBy("user_id"))
-
-
-_KMEANS_UPDATE_SQL = """
-WITH ix AS (
-  SELECT vec_id, embedding,
-         unnest(range(1, len(embedding) + 1)) AS i
-  FROM embeddings
-), v AS (
-  SELECT vec_id, i,
-         CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000 + 0.5)
-              AS HUGEINT) AS q
-  FROM ix
-), c AS (
-  SELECT vec_id AS cid, i, q AS cq FROM v WHERE vec_id < 8
-), d AS (
-  SELECT v.vec_id, c.cid, sum((v.q - c.cq) * (v.q - c.cq)) AS d2
-  FROM v JOIN c USING (i) GROUP BY 1, 2
-), mem AS (
-  SELECT vec_id, cid FROM (
-    SELECT vec_id, cid,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-    FROM d) WHERE rn = 1
-), sz AS (
-  SELECT cid, CAST(count(*) AS HUGEINT) AS size FROM mem GROUP BY 1
-), nc AS (
-  SELECT m.cid, v.i, sum(v.q) // max(sz.size) AS nq
-  FROM mem m JOIN v ON v.vec_id = m.vec_id JOIN sz ON sz.cid = m.cid
-  GROUP BY m.cid, v.i
-)
-SELECT CAST(nc.cid AS BIGINT) AS cluster, CAST(max(sz.size) AS BIGINT) AS size,
-       CAST(sum((nc.nq - c.cq) * (nc.nq - c.cq)) AS BIGINT) AS shift_sq_e12
-FROM nc JOIN c ON c.cid = nc.cid AND c.i = nc.i
-JOIN sz ON sz.cid = nc.cid
-GROUP BY nc.cid ORDER BY cluster
-"""
-
-
-@register("ann_kmeans_update", _KMEANS_UPDATE_SQL)
-def ann_kmeans_update(spark, sf_dir):
-    """The k-means centroid UPDATE step — together with ann_kmeans_assign
-    this is one full Lloyd iteration, the loop body of distributed
-    k-means / IVF training. Assignment re-derived over the e6-quantized
-    integer coordinates (bit-identical to ann_kmeans_assign), then the
-    new centroid's dim means as truncating integer division Σq div size
-    (identical `div`/`//` semantics for the signed sums), and the
-    per-cluster squared L2 shift between seed and updated centroid —
-    the convergence signal a driver loop would test. The update is the
-    (cluster,dim)-keyed aggregate distributed k-means actually runs:
-    |corpus|·d narrow rows map-side-combined into k·d cells; shift math
-    joins two k·d-row tables. Exact integers end-to-end."""
-    embs = _t(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * 1000000 + F.lit(0.5))
-        .cast("decimal(38,0)"))
-    v = embs.select("vec_id", qv.alias("q"))
-    cents = (v.filter(F.col("vec_id") < 8)
-             .select(F.col("vec_id").alias("cid"), F.col("q").alias("cq")))
-    d2 = (v.crossJoin(F.broadcast(cents))
-          .select("vec_id", "cid",
-                  F.aggregate(
-                      F.zip_with("q", "cq", lambda a, b: (a - b) * (a - b)),
-                      F.lit(0).cast("decimal(38,0)"),
-                      lambda acc, x: acc + x).alias("d2")))
-    mem = (d2.groupBy("vec_id")
-           .agg(F.min(F.struct(F.col("d2"), F.col("cid"))).alias("m"))
-           .select("vec_id", F.col("m.cid").alias("cluster")))
-    pd_ = (mem.join(v, "vec_id")
-           .select("cluster", F.posexplode("q").alias("i", "qd")))
-    sz = mem.groupBy("cluster").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("size"))
-    nc = (pd_.groupBy("cluster", "i").agg(F.sum("qd").alias("s"))
-          .join(F.broadcast(sz), "cluster")
-          .select("cluster", "i", F.expr("s div size").alias("nq")))
-    cd = cents.select("cid", F.posexplode("cq").alias("i", "cq"))
-    return (nc.join(F.broadcast(cd),
-                    (nc["cluster"] == cd["cid"]) & (nc["i"] == cd["i"]))
-            .groupBy("cluster")
-            .agg(F.sum((F.col("nq") - F.col("cq"))
-                       * (F.col("nq") - F.col("cq"))).alias("sh"))
-            .join(F.broadcast(sz), "cluster")
-            .select(F.col("cluster").cast("long").alias("cluster"),
-                    F.col("size").cast("long").alias("size"),
-                    F.col("sh").cast("long").alias("shift_sq_e12"))
-            .orderBy("cluster"))
-
-
-_INTERARRIVAL_SQL = """
-WITH o AS (
-  SELECT o_custkey, o_orderdate,
-         lag(o_orderdate) OVER
-           (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS prev
-  FROM orders
-), s AS (
-  SELECT o_custkey,
-         CAST(count(*) AS HUGEINT) AS n_orders,
-         CAST(date_diff('day', min(o_orderdate), max(o_orderdate))
-              AS HUGEINT) AS span_days,
-         max(CASE WHEN prev IS NULL THEN NULL
-             ELSE date_diff('day', prev, o_orderdate) END) AS max_gap
-  FROM o GROUP BY 1 HAVING count(*) >= 2
-)
-SELECT o_custkey AS custkey, CAST(n_orders AS BIGINT) AS n_orders,
-       CAST(span_days AS BIGINT) AS span_days,
-       CAST(span_days * 100 // (n_orders - 1) AS BIGINT) AS mean_gap_e2,
-       CAST(max_gap AS BIGINT) AS max_gap_days
-FROM s ORDER BY custkey
-"""
-
-
-@register("q_orders_interarrival", _INTERARRIVAL_SQL)
-def q_orders_interarrival(spark, sf_dir):
-    """Per-customer order inter-arrival profile — the purchase-cadence
-    feature behind churn / next-order-date models. Mean gap needs no
-    window at all (consecutive gaps telescope: span/(n−1), emitted as
-    exact e2 fixed-point); max gap uses one lag() over the customer
-    partition, deterministic because equal dates yield zero-or-equal
-    gaps under any orderkey tiebreak. Whole-day integer arithmetic
-    throughout; one key-partitioned window plus a combinable aggregate,
-    both on the natural o_custkey shuffle."""
-    o = _t(spark, sf_dir, "orders")
-    w = (Window.partitionBy("o_custkey")
-         .orderBy("o_orderdate", "o_orderkey"))
-    d = o.select("o_custkey", "o_orderdate",
-                 F.lag("o_orderdate").over(w).alias("prev"))
-    s = (d.groupBy("o_custkey")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n_orders"),
-              F.datediff(F.max("o_orderdate"), F.min("o_orderdate"))
-              .cast("decimal(38,0)").alias("span_days"),
-              F.max(F.datediff(F.col("o_orderdate"), F.col("prev")))
-              .alias("max_gap"))
-         .filter(F.col("n_orders") >= 2))
-    return (s.select(F.col("o_custkey").alias("custkey"),
-                     F.col("n_orders").cast("long").alias("n_orders"),
-                     F.col("span_days").cast("long").alias("span_days"),
-                     F.expr("CAST(span_days * 100 div (n_orders - 1)"
-                            " AS BIGINT)").alias("mean_gap_e2"),
-                     F.col("max_gap").cast("long").alias("max_gap_days"))
-            .orderBy("custkey"))
-
-
-_SHIP_LAG_SQL = """
-WITH l AS (
-  SELECT l.l_returnflag,
-         CAST(date_diff('day', o.o_orderdate, l.l_shipdate) AS HUGEINT)
-           AS lag_days
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-)
-SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(lag_days) * 100 // count(*) AS BIGINT) AS mean_lag_e2,
-       CAST(max(lag_days) AS BIGINT) AS max_lag_days,
-       CAST(sum(CASE WHEN lag_days > 90 THEN 1 ELSE 0 END) * 1000000
-            // count(*) AS BIGINT) AS slow_rate_e6
-FROM l GROUP BY 1 ORDER BY l_returnflag
-"""
-
-
-@register("q_lineitem_ship_lag", _SHIP_LAG_SQL)
-def q_lineitem_ship_lag(spark, sf_dir):
-    """Logistics SLA profile per return flag: order→ship fulfilment days
-    (exact e2 mean + max) and the >90-day slow-fulfilment rate (e6) —
-    the warehouse-performance rollup a supply-chain dashboard tracks,
-    the aggregate cousin of Q12's late-line predicate re-expressed over
-    the columns this corpus carries. Whole-day integer diffs; the
-    lineitem↔orders join runs on the natural l_orderkey/o_orderkey
-    shuffle (AQE-eligible equi-join, both sides pruned to two columns),
-    then one 3-key combinable aggregate. At 100 TB the join IS the
-    plan's cost and it is the co-partitioned one you'd want."""
-    li = _t(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_returnflag", "l_shipdate")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    l = (li.join(o, li["l_orderkey"] == o["o_orderkey"])
-         .select("l_returnflag",
-                 F.datediff("l_shipdate", "o_orderdate")
-                 .cast("decimal(38,0)").alias("lag_days")))
-    return (l.groupBy("l_returnflag")
-            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("nn"),
-                 F.sum("lag_days").alias("sl"),
-                 F.max("lag_days").cast("long").alias("max_lag_days"),
-                 F.sum(F.when(F.col("lag_days") > 90, 1).otherwise(0))
-                 .cast("decimal(38,0)").alias("ns"))
-            .select("l_returnflag", F.col("nn").cast("long").alias("n"),
-                    F.expr("CAST(sl * 100 div nn AS BIGINT)")
-                    .alias("mean_lag_e2"), "max_lag_days",
-                    F.expr("CAST(ns * 1000000 div nn AS BIGINT)")
-                    .alias("slow_rate_e6"))
-            .orderBy("l_returnflag"))
-
-
-_SENTENCE_PROFILE_SQL = """
-WITH s AS (
-  SELECT lang,
-         len(list_filter(string_split_regex(trim(text), '[.!?]+\\s+'),
-                         x -> length(x) > 0)) AS n_sent,
-         len(string_split_regex(trim(lower(text)), '\\s+')) AS n_words
-  FROM documents
-)
-SELECT lang, CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_sent) AS BIGINT) AS n_sentences,
-       CAST(sum(n_words) AS BIGINT) AS n_words,
-       CAST(CAST(sum(n_words) AS HUGEINT) * 100
-            // sum(n_sent) AS BIGINT) AS words_per_sentence_e2
-FROM s GROUP BY 1 ORDER BY lang
-"""
-
-
-@register("text_sentence_profile", _SENTENCE_PROFILE_SQL)
-def text_sentence_profile(spark, sf_dir):
-    """Per-language sentence-length profile — mean words per sentence is
-    the readability / fragment-detection feature quality filters gate on
-    (Gopher's 'no terminal punctuation' family). The sentence splitter
-    is the RE2-SAFE '[.!?]+\\s+' (no lookbehind — DuckDB's RE2 has
-    none, so the regex is chosen to mean the same thing in Java regex
-    and RE2), empty segments dropped in both engines; words use the
-    corpus-wide whitespace tokenization every text_* query shares.
-    Counts and the e2 ratio are exact integers; one narrow map + 5-key
-    aggregate, no shuffle beyond it."""
-    d = _t(spark, sf_dir, "documents")
-    sents = F.size(F.filter(
-        F.split(F.trim(F.col("text")), r"[.!?]+\s+"),
-        lambda x: F.length(x) > 0))
-    words = F.size(F.split(F.trim(F.lower("text")), r"\s+"))
-    s = d.select("lang", sents.alias("n_sent"), words.alias("n_words"))
-    return (s.groupBy("lang")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                 F.sum("n_sent").cast("decimal(38,0)").alias("ns"),
-                 F.sum("n_words").cast("decimal(38,0)").alias("nw"))
-            .select("lang", "n_docs",
-                    F.col("ns").cast("long").alias("n_sentences"),
-                    F.col("nw").cast("long").alias("n_words"),
-                    F.expr("CAST(nw * 100 div ns AS BIGINT)")
-                    .alias("words_per_sentence_e2"))
-            .orderBy("lang"))
-
-
-_RECIPROCITY_SQL = """
-WITH s AS (
-  SELECT event_type AS src,
-         lead(event_type, 1) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM events
-), c AS (
-  SELECT src, dst, CAST(count(*) AS HUGEINT) AS n
-  FROM s WHERE dst IS NOT NULL AND dst != src GROUP BY 1, 2
-)
-SELECT c.src, CAST(sum(c.n) AS BIGINT) AS n_out,
-       CAST(sum(least(c.n, coalesce(r.n, 0))) AS BIGINT) AS n_reciprocated,
-       CAST(sum(least(c.n, coalesce(r.n, 0))) * 1000000
-            // sum(c.n) AS BIGINT) AS reciprocity_e6
-FROM c LEFT JOIN c r ON r.src = c.dst AND r.dst = c.src
-GROUP BY c.src ORDER BY c.src
-"""
-
-
-@register("q_events_transition_reciprocity", _RECIPROCITY_SQL)
-def q_events_transition_reciprocity(spark, sf_dir):
-    """Reciprocity of the event-type transition digraph: per source type,
-    how much of its outgoing transition mass is matched by the reverse
-    transition (Σ min(c_ab, c_ba) / Σ c_ab, e6 fixed-point) — the
-    oscillation-vs-funnel diagnostic read off the same lead() timeline
-    as the Markov matrix (ts, event_id order). The reverse-pair match is
-    a self-join on the |types|² count matrix — a broadcast-sized table
-    no matter how many events fed it. Self-loops excluded (they are
-    trivially reciprocal). Exact integers throughout."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = e.select(F.col("event_type").alias("src"),
-                 F.lead("event_type").over(w).alias("dst"))
-    c = (s.filter(F.col("dst").isNotNull() & (F.col("dst") != F.col("src")))
-         .groupBy("src", "dst")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n")))
-    r = c.select(F.col("src").alias("rsrc"), F.col("dst").alias("rdst"),
-                 F.col("n").alias("rn"))
-    return (c.join(F.broadcast(r),
-                   (F.col("dst") == F.col("rsrc"))
-                   & (F.col("src") == F.col("rdst")), "left")
-            .groupBy("src")
-            .agg(F.sum("n").alias("no"),
-                 F.sum(F.least(F.col("n"),
-                               F.coalesce(F.col("rn"),
-                                          F.lit(0).cast("decimal(38,0)"))))
-                 .alias("nr"))
-            .select("src", F.col("no").cast("long").alias("n_out"),
-                    F.col("nr").cast("long").alias("n_reciprocated"),
-                    F.expr("CAST(nr * 1000000 div no AS BIGINT)")
-                    .alias("reciprocity_e6"))
-            .orderBy("src"))
-
-
-_SILHOUETTE_SQL = """
-WITH ix AS (
-  SELECT vec_id, embedding,
-         unnest(range(1, len(embedding) + 1)) AS i
-  FROM embeddings
-), v AS (
-  SELECT vec_id, i,
-         CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000 + 0.5)
-              AS HUGEINT) AS q
-  FROM ix
-), c AS (
-  SELECT vec_id AS cid, i, q AS cq FROM v WHERE vec_id < 8
-), d AS (
-  SELECT v.vec_id, c.cid, sum((v.q - c.cq) * (v.q - c.cq)) AS d2
-  FROM v JOIN c USING (i) GROUP BY 1, 2
-), r AS (
-  SELECT vec_id, cid, d2,
-         row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-  FROM d
-), m AS (
-  SELECT a.vec_id, a.cid AS cluster,
-         CASE WHEN b.d2 = 0 THEN 0
-              ELSE (b.d2 - a.d2) * 1000000 // b.d2 END AS margin
-  FROM r a JOIN r b ON b.vec_id = a.vec_id AND b.rn = 2
-  WHERE a.rn = 1
-)
-SELECT CAST(cluster AS BIGINT) AS cluster, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(margin) // count(*) AS BIGINT) AS mean_margin_e6,
-       CAST(min(margin) AS BIGINT) AS min_margin_e6
-FROM m GROUP BY 1 ORDER BY cluster
-"""
-
-
-@register("ann_silhouette_simplified", _SILHOUETTE_SQL)
-def ann_silhouette_simplified(spark, sf_dir):
-    """Simplified (centroid-based) silhouette — the cluster-quality audit
-    run after every k-means fit, linear instead of O(n²) because a(x)
-    and b(x) use centroid distances: per point, a² = squared distance
-    to its own (nearest) centroid, b² = to the runner-up, and the
-    separation margin (b²−a²)·1e6 div b² ∈ [0,1e6] (0 = on the decision
-    boundary, 1e6 = perfectly separated). Same e6-quantized integer
-    coordinates as ann_kmeans_assign; per-cluster mean and worst margin.
-    Broadcast k centroids against the corpus — no shuffle until the
-    k-row aggregate; rank tie-break (d2, cid) pinned in both engines."""
-    embs = _t(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * 1000000 + F.lit(0.5))
-        .cast("decimal(38,0)"))
-    v = embs.select("vec_id", qv.alias("q"))
-    cents = (v.filter(F.col("vec_id") < 8)
-             .select(F.col("vec_id").alias("cid"), F.col("q").alias("cq")))
-    d2 = (v.crossJoin(F.broadcast(cents))
-          .select("vec_id", "cid",
-                  F.aggregate(
-                      F.zip_with("q", "cq", lambda a, b: (a - b) * (a - b)),
-                      F.lit(0).cast("decimal(38,0)"),
-                      lambda acc, x: acc + x).alias("d2")))
-    w = Window.partitionBy("vec_id").orderBy("d2", "cid")
-    r = (d2.select("vec_id", "cid", "d2",
-                   F.row_number().over(w).alias("rn"))
-         .filter(F.col("rn") <= 2))
-    a = (r.filter(F.col("rn") == 1)
-         .select("vec_id", F.col("cid").alias("cluster"),
-                 F.col("d2").alias("a2")))
-    b = r.filter(F.col("rn") == 2).select("vec_id", F.col("d2").alias("b2"))
-    m = (a.join(b, "vec_id")
-         .select("cluster",
-                 F.when(F.col("b2") == 0, F.lit(0).cast("decimal(38,0)"))
-                 .otherwise(F.expr("(b2 - a2) * 1000000 div b2"))
-                 .alias("margin")))
-    return (m.groupBy("cluster")
-            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("nn"),
-                 F.sum("margin").alias("sm"),
-                 F.min("margin").cast("long").alias("min_margin_e6"))
-            .select(F.col("cluster").cast("long").alias("cluster"),
-                    F.col("nn").cast("long").alias("n"),
-                    F.expr("CAST(sm div nn AS BIGINT)")
-                    .alias("mean_margin_e6"), "min_margin_e6")
-            .orderBy("cluster"))
-
-
-_CROSS_SELL_SQL = """
-WITH ob AS (
-  SELECT DISTINCT l.l_orderkey AS okey, p.p_brand AS brand
-  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-), bc AS (
-  SELECT brand, CAST(count(*) AS HUGEINT) AS n FROM ob GROUP BY 1
-), tot AS (SELECT CAST(count(DISTINCT okey) AS HUGEINT) AS n FROM ob),
-pairs AS (
-  SELECT a.brand AS brand_a, b.brand AS brand_b,
-         CAST(count(*) AS HUGEINT) AS n_pair
-  FROM ob a JOIN ob b ON b.okey = a.okey AND a.brand < b.brand
-  GROUP BY 1, 2 HAVING count(*) >= 20
-)
-SELECT brand_a, brand_b, CAST(n_pair AS BIGINT) AS n_pair,
-       CAST(n_pair * (SELECT n FROM tot) * 1000000
-            // (ca.n * cb.n) AS BIGINT) AS lift_e6
-FROM pairs JOIN bc ca ON ca.brand = brand_a
-JOIN bc cb ON cb.brand = brand_b
-ORDER BY brand_a, brand_b
-"""
-
-
-@register("q_brand_cross_sell", _CROSS_SELL_SQL)
-def q_brand_cross_sell(spark, sf_dir):
-    """Market-basket brand affinity: for brand pairs co-purchased in the
-    same order, support count and lift = P(a,b)/(P(a)P(b)) as exact e6
-    fixed-point — the cross-sell signal behind recommendation rules,
-    over the retail tables instead of the event stream
-    (q_events_assoc_rules' cousin). The self-join is keyed on the order
-    after DISTINCT brand-per-order, so per-key fan-out is bounded by
-    brands-per-order (≤ lines-per-order ≤ 7), never by corpus size; the
-    brand marginals and total are broadcast-sized. Support floor 20
-    keeps the pair table reportable."""
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand")
-    ob = (li.join(p, li["l_partkey"] == p["p_partkey"])
-          .select(F.col("l_orderkey").alias("okey"),
-                  F.col("p_brand").alias("brand")).distinct())
-    bc = ob.groupBy("brand").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"))
-    tot = ob.agg(F.count_distinct("okey").cast("decimal(38,0)").alias("nt"))
-    b = ob.select(F.col("okey").alias("bokey"), F.col("brand").alias("brand_b"))
-    pairs = (ob.join(b, (F.col("okey") == F.col("bokey"))
-                     & (F.col("brand") < F.col("brand_b")))
-             .groupBy(F.col("brand").alias("brand_a"), "brand_b")
-             .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n_pair"))
-             .filter(F.col("n_pair") >= 20))
-    ca = bc.select(F.col("brand").alias("brand_a"), F.col("n").alias("na"))
-    cb = bc.select(F.col("brand").alias("brand_b"), F.col("n").alias("nb"))
-    return (pairs.join(F.broadcast(ca), "brand_a")
-            .join(F.broadcast(cb), "brand_b")
-            .crossJoin(F.broadcast(tot))
-            .select("brand_a", "brand_b",
-                    F.col("n_pair").cast("long").alias("n_pair"),
-                    F.expr("CAST(n_pair * nt * 1000000 div (na * nb)"
-                           " AS BIGINT)").alias("lift_e6"))
-            .orderBy("brand_a", "brand_b"))
-
-
-_ZIPF_SQL = """
-WITH w AS (
-  SELECT unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-  FROM documents
-), tf AS (
-  SELECT term, CAST(count(*) AS HUGEINT) AS f FROM w GROUP BY 1
-), tot AS (SELECT sum(f) AS s FROM tf),
-top AS (
-  SELECT term, f, row_number() OVER (ORDER BY f DESC, term) AS rn
-  FROM tf ORDER BY f DESC, term LIMIT 100
-)
-SELECT CAST(rn AS BIGINT) AS rank, term, CAST(f AS BIGINT) AS freq,
-       CAST(rn * f * 1000000 // (SELECT s FROM tot) AS BIGINT)
-         AS zipf_c_e6
-FROM top ORDER BY rank
-"""
-
-
-@register("text_zipf_profile", _ZIPF_SQL)
-def text_zipf_profile(spark, sf_dir):
-    """Zipf's-law profile of the corpus: top-100 terms with rank·freq/N
-    as exact e6 fixed-point — under Zipf, rank×frequency is roughly
-    constant, so the zipf_c_e6 column flattening out IS the power-law
-    check corpus QA runs (a bent curve flags boilerplate flooding or a
-    synthetic vocabulary). Term frequencies are one map-side-combined
-    aggregate; the top-100 is a distributed TakeOrdered (orderBy+limit,
-    deterministic (freq desc, term) tie-break), and the rank window
-    runs over those 100 rows only — never a global sort of the
-    vocabulary."""
-    d = _t(spark, sf_dir, "documents")
-    tf = (d.select(F.explode(F.split(F.trim(F.lower("text")), r"\s+"))
-                   .alias("term"))
-          .groupBy("term")
-          .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("f")))
-    tot = tf.agg(F.sum("f").alias("s"))
-    top = tf.orderBy(F.col("f").desc(), "term").limit(100)
-    w = Window.orderBy(F.col("f").desc(), "term")
-    return (top.select(F.row_number().over(w).alias("rank"), "term", "f")
-            .crossJoin(F.broadcast(tot))
-            .select(F.col("rank").cast("long").alias("rank"), "term",
-                    F.col("f").cast("long").alias("freq"),
-                    F.expr("CAST(rank * f * 1000000 div s AS BIGINT)")
-                    .alias("zipf_c_e6"))
-            .orderBy("rank"))
-
-
-_HAPAX_SQL = """
-WITH w AS (
-  SELECT source,
-         unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-  FROM documents
-), wf AS (
-  SELECT source, term, CAST(count(*) AS HUGEINT) AS f
-  FROM w GROUP BY 1, 2
-)
-SELECT source, CAST(count(*) AS BIGINT) AS vocab,
-       CAST(sum(f) AS BIGINT) AS tokens,
-       CAST(sum(CASE WHEN f = 1 THEN 1 ELSE 0 END) AS BIGINT) AS hapax,
-       CAST(sum(CASE WHEN f = 1 THEN 1 ELSE 0 END) * 1000000
-            // count(*) AS BIGINT) AS hapax_ratio_e6
-FROM wf GROUP BY 1 ORDER BY source
-"""
-
-
-@register("text_hapax_ratio", _HAPAX_SQL)
-def text_hapax_ratio(spark, sf_dir):
-    """Hapax-legomena ratio per source: share of the vocabulary seen
-    exactly once (e6 fixed-point) — high hapax = productive natural
-    text or OCR noise, low hapax = templated/boilerplate content, the
-    classic corpus-linguistics complement to type-token diversity
-    (text_lexical_diversity). Two combinable aggregates on the
-    (source, term) key — the same shuffle a per-source vocabulary
-    build already pays; counts exact integers throughout."""
-    d = _t(spark, sf_dir, "documents")
-    wf = (d.select("source",
-                   F.explode(F.split(F.trim(F.lower("text")), r"\s+"))
-                   .alias("term"))
-          .groupBy("source", "term")
-          .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("f")))
-    hap = F.sum(F.when(F.col("f") == 1, 1).otherwise(0)) \
-        .cast("decimal(38,0)")
-    return (wf.groupBy("source")
-            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("v"),
-                 F.sum("f").cast("long").alias("tokens"),
-                 hap.alias("h"))
-            .select("source", F.col("v").cast("long").alias("vocab"),
-                    "tokens", F.col("h").cast("long").alias("hapax"),
-                    F.expr("CAST(h * 1000000 div v AS BIGINT)")
-                    .alias("hapax_ratio_e6"))
-            .orderBy("source"))
-
-
-_AUDIENCE_SQL = """
-WITH ut AS (
-  SELECT DISTINCT user_id, event_type FROM events
-), tc AS (
-  SELECT event_type, CAST(count(*) AS HUGEINT) AS n FROM ut GROUP BY 1
-), inter AS (
-  SELECT a.event_type AS type_a, b.event_type AS type_b,
-         CAST(count(*) AS HUGEINT) AS n_both
-  FROM ut a JOIN ut b
-    ON b.user_id = a.user_id AND a.event_type < b.event_type
-  GROUP BY 1, 2
-)
-SELECT type_a, type_b, CAST(ca.n AS BIGINT) AS n_a,
-       CAST(cb.n AS BIGINT) AS n_b, CAST(n_both AS BIGINT) AS n_both,
-       CAST(n_both * 1000000 // (ca.n + cb.n - n_both) AS BIGINT)
-         AS jaccard_e6
-FROM inter JOIN tc ca ON ca.event_type = type_a
-JOIN tc cb ON cb.event_type = type_b
-ORDER BY type_a, type_b
-"""
-
-
-@register("q_events_audience_overlap", _AUDIENCE_SQL)
-def q_events_audience_overlap(spark, sf_dir):
-    """Audience overlap between event types: exact Jaccard of the user
-    sets for every type pair (e6 fixed-point) — the segment-overlap
-    matrix growth teams read before merging or cross-promoting
-    features, and the exact ground truth sketch_jaccard_events
-    approximates with KMV. The self-join is keyed on user_id after
-    DISTINCT (user, type), so fan-out is bounded by types-per-user
-    (≤ |event types|, single digits) — never quadratic in events; the
-    per-type marginals are broadcast-sized."""
-    e = _t(spark, sf_dir, "events")
-    ut = e.select("user_id", "event_type").distinct()
-    tc = ut.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"))
-    b = ut.select(F.col("user_id").alias("buid"),
-                  F.col("event_type").alias("type_b"))
-    inter = (ut.join(b, (F.col("user_id") == F.col("buid"))
-                     & (F.col("event_type") < F.col("type_b")))
-             .groupBy(F.col("event_type").alias("type_a"), "type_b")
-             .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n_both")))
-    ca = tc.select(F.col("event_type").alias("type_a"), F.col("n").alias("na"))
-    cb = tc.select(F.col("event_type").alias("type_b"), F.col("n").alias("nb"))
-    return (inter.join(F.broadcast(ca), "type_a")
-            .join(F.broadcast(cb), "type_b")
-            .select("type_a", "type_b",
-                    F.col("na").cast("long").alias("n_a"),
-                    F.col("nb").cast("long").alias("n_b"),
-                    F.col("n_both").cast("long").alias("n_both"),
-                    F.expr("CAST(n_both * 1000000 div (na + nb - n_both)"
-                           " AS BIGINT)").alias("jaccard_e6"))
-            .orderBy("type_a", "type_b"))
-
-
-_REV_GROWTH_SQL = """
-WITH m AS (
-  SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
-         sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS HUGEINT))
-           AS cents
-  FROM orders GROUP BY 1
-), g AS (
-  SELECT month, cents,
-         lag(cents) OVER (ORDER BY month) AS prev
-  FROM m
-)
-SELECT month, CAST(cents AS BIGINT) AS revenue_cents,
-       CAST(prev AS BIGINT) AS prev_cents,
-       CAST((cents - prev) * 1000000 // prev AS BIGINT) AS growth_e6
-FROM g ORDER BY month
-"""
-
-
-@register("q_orders_revenue_growth", _REV_GROWTH_SQL)
-def q_orders_revenue_growth(spark, sf_dir):
-    """Month-over-month revenue growth, exact: monthly revenue in integer
-    cents (the repo-wide money discipline), previous month via lag(),
-    and signed growth rate as e6 fixed-point — truncating division
-    toward zero in BOTH engines (Spark `div` ≡ DuckDB `//` on signed
-    integers, verified), so negative months hash identically. First
-    month's growth is NULL by construction. The lag window is a global
-    sort — over the ~85-row monthly aggregate, not the fact table; the
-    heavy work is one map-side-combined month aggregate."""
-    o = _t(spark, sf_dir, "orders")
-    m = (o.groupBy(F.date_format(F.date_trunc("month", F.col("o_orderdate")
-                                              .cast("date")), "yyyy-MM")
-                   .alias("month"))
-         .agg(F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100)
-                    .cast("decimal(38,0)")).alias("cents")))
-    g = m.select("month", "cents",
-                 F.lag("cents").over(Window.orderBy("month")).alias("prev"))
-    return (g.select("month",
-                     F.col("cents").cast("long").alias("revenue_cents"),
-                     F.col("prev").cast("long").alias("prev_cents"),
-                     F.expr("CAST((cents - prev) * 1000000 div prev"
-                            " AS BIGINT)").alias("growth_e6"))
-            .orderBy("month"))
-
-
-_DOW_SEASONALITY_SQL = """
-WITH e AS (
-  SELECT event_type, CAST(isodow(ts) AS BIGINT) AS dow FROM events
-), td AS (
-  SELECT event_type, dow, CAST(count(*) AS HUGEINT) AS n
-  FROM e GROUP BY 1, 2
-), t AS (SELECT event_type, sum(n) AS nt FROM td GROUP BY 1),
-d AS (SELECT dow, sum(n) AS nd FROM td GROUP BY 1),
-g AS (SELECT sum(n) AS ng FROM td)
-SELECT td.event_type, td.dow, CAST(td.n AS BIGINT) AS n,
-       CAST(td.n * (SELECT ng FROM g) * 1000000
-            // (t.nt * d.nd) AS BIGINT) AS seasonality_e6
-FROM td JOIN t ON t.event_type = td.event_type JOIN d ON d.dow = td.dow
-ORDER BY td.event_type, td.dow
-"""
-
-
-@register("q_events_dow_seasonality", _DOW_SEASONALITY_SQL)
-def q_events_dow_seasonality(spark, sf_dir):
-    """Day-of-week seasonality index per event type: observed share vs
-    the expected share if the type followed the overall weekly rhythm —
-    n_td·N / (n_t·n_d) as e6 fixed-point (1e6 = no weekly skew) — the
-    lift matrix behind 'logins spike Mondays, purchases Saturdays'.
-    ISO day-of-week (1=Mon) pinned in both engines (Spark weekday()+1 ≡
-    DuckDB isodow). One |types|×7 aggregate off the event scan; the
-    three marginal tables are derived from it, all broadcast-sized."""
-    e = _t(spark, sf_dir, "events")
-    td = (e.select("event_type",
-                   (F.weekday("ts") + 1).cast("long").alias("dow"))
-          .groupBy("event_type", "dow")
-          .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n")))
-    t = td.groupBy("event_type").agg(F.sum("n").alias("nt"))
-    d = td.groupBy("dow").agg(F.sum("n").alias("nd"))
-    g = td.agg(F.sum("n").alias("ng"))
-    return (td.join(F.broadcast(t), "event_type")
-            .join(F.broadcast(d), "dow")
-            .crossJoin(F.broadcast(g))
-            .select("event_type", "dow", F.col("n").cast("long").alias("n"),
-                    F.expr("CAST(n * ng * 1000000 div (nt * nd) AS BIGINT)")
-                    .alias("seasonality_e6"))
-            .orderBy("event_type", "dow"))
-
-
-_K_ANON_SQL = """
-WITH qi AS (
-  SELECT event_type, CAST(isodow(ts) AS BIGINT) AS dow,
-         CAST(hour(ts) AS BIGINT) AS hr, count(*) AS k
-  FROM events GROUP BY 1, 2, 3
-), b AS (
-  SELECT CASE WHEN k = 1 THEN 1 WHEN k < 5 THEN 2
-              WHEN k < 10 THEN 3 ELSE 4 END AS bucket_ord,
-         CASE WHEN k = 1 THEN '1' WHEN k < 5 THEN '2-4'
-              WHEN k < 10 THEN '5-9' ELSE '10+' END AS k_bucket,
-         CAST(k AS HUGEINT) AS k
-  FROM qi
-), tot AS (SELECT sum(k) AS n FROM b)
-SELECT bucket_ord, k_bucket, CAST(count(*) AS BIGINT) AS n_groups,
-       CAST(sum(k) AS BIGINT) AS n_rows,
-       CAST(sum(k) * 1000000 // (SELECT n FROM tot) AS BIGINT)
-         AS pct_rows_e6
-FROM b GROUP BY 1, 2 ORDER BY bucket_ord
-"""
-
-
-@register("q_events_k_anonymity", _K_ANON_SQL)
-def q_events_k_anonymity(spark, sf_dir):
-    """k-anonymity audit over the quasi-identifier (event_type, iso
-    day-of-week, hour): how many equivalence classes — and what share
-    of rows — sit at k=1 (unique, re-identifiable), k∈[2,5), k∈[5,10),
-    k≥10. The privacy gate a training-data release runs before shipping
-    behavioral logs; rows in small-k classes are the redaction /
-    generalization backlog. One QI-keyed count (map-side combined),
-    then a 4-bucket rollup; share-of-rows as exact e6 fixed-point."""
-    e = _t(spark, sf_dir, "events")
-    qi = (e.select("event_type",
-                   (F.weekday("ts") + 1).cast("long").alias("dow"),
-                   F.hour("ts").cast("long").alias("hr"))
-          .groupBy("event_type", "dow", "hr")
-          .agg(F.count(F.lit(1)).alias("k")))
-    b = qi.select(
-        F.when(F.col("k") == 1, 1).when(F.col("k") < 5, 2)
-        .when(F.col("k") < 10, 3).otherwise(4).alias("bucket_ord"),
-        F.when(F.col("k") == 1, "1").when(F.col("k") < 5, "2-4")
-        .when(F.col("k") < 10, "5-9").otherwise("10+").alias("k_bucket"),
-        F.col("k").cast("decimal(38,0)").alias("k"))
-    tot = b.agg(F.sum("k").alias("n"))
-    return (b.groupBy("bucket_ord", "k_bucket")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_groups"),
-                 F.sum("k").alias("nr"))
-            .crossJoin(F.broadcast(tot))
-            .select("bucket_ord", "k_bucket", "n_groups",
-                    F.col("nr").cast("long").alias("n_rows"),
-                    F.expr("CAST(nr * 1000000 div n AS BIGINT)")
-                    .alias("pct_rows_e6"))
-            .orderBy("bucket_ord"))
-
-
-_NEW_RETURNING_SQL = """
-WITH f AS (
-  SELECT user_id, CAST(min(ts) AS DATE) AS first_day FROM events GROUP BY 1
-), a AS (
-  SELECT DISTINCT CAST(ts AS DATE) AS day, user_id FROM events
-)
-SELECT a.day, CAST(count(*) AS BIGINT) AS active_users,
-       CAST(sum(CASE WHEN f.first_day = a.day THEN 1 ELSE 0 END)
-            AS BIGINT) AS new_users,
-       CAST(sum(CASE WHEN f.first_day = a.day THEN 0 ELSE 1 END)
-            AS BIGINT) AS returning_users
-FROM a JOIN f ON f.user_id = a.user_id
-GROUP BY a.day ORDER BY a.day
-"""
-
-
-@register("q_events_new_vs_returning", _NEW_RETURNING_SQL)
-def q_events_new_vs_returning(spark, sf_dir):
-    """Daily new-vs-returning split — the growth-accounting curve every
-    product dashboard leads with: a user is 'new' on the day of their
-    first event, 'returning' on any later active day. Two aggregates on
-    the SAME user_id shuffle key (first-seen date, then distinct active
-    (day, user)) and one equi-join between them; no window, no second
-    scan shape — the join co-locates on the key both sides were already
-    hashed by. Exact integer counts."""
-    e = _t(spark, sf_dir, "events")
-    f = (e.groupBy("user_id")
-         .agg(F.min("ts").cast("date").alias("first_day")))
-    a = e.select(F.col("ts").cast("date").alias("day"), "user_id").distinct()
-    nu = F.sum(F.when(F.col("first_day") == F.col("day"), 1).otherwise(0))
-    return (a.join(f, "user_id")
-            .groupBy("day")
-            .agg(F.count(F.lit(1)).cast("long").alias("active_users"),
-                 nu.cast("long").alias("new_users"),
-                 F.sum(F.when(F.col("first_day") == F.col("day"), 0)
-                       .otherwise(1)).cast("long")
-                 .alias("returning_users"))
-            .orderBy("day"))
-
-
-_LIFECYCLE_SQL = """
-WITH u AS (
-  SELECT user_id, CAST(count(*) AS HUGEINT) AS n_events,
-         CAST(count(DISTINCT CAST(ts AS DATE)) AS HUGEINT) AS active_days,
-         CAST(date_diff('day', CAST(min(ts) AS DATE), CAST(max(ts) AS DATE))
-              + 1 AS HUGEINT) AS lifespan_days
-  FROM events GROUP BY 1
-), s AS (
-  SELECT CASE WHEN active_days < 25 THEN 1 WHEN active_days < 27 THEN 2
-              WHEN active_days < 29 THEN 3 ELSE 4 END AS seg_ord,
-         CASE WHEN active_days < 25 THEN 'light'
-              WHEN active_days < 27 THEN 'casual'
-              WHEN active_days < 29 THEN 'regular'
-              ELSE 'power' END AS segment,
-         n_events, active_days, lifespan_days
-  FROM u
-)
-SELECT seg_ord, segment, CAST(count(*) AS BIGINT) AS n_users,
-       CAST(sum(n_events) AS BIGINT) AS n_events,
-       CAST(sum(n_events) * 100 // count(*) AS BIGINT)
-         AS events_per_user_e2,
-       CAST(sum(active_days) * 100 // count(*) AS BIGINT)
-         AS active_days_per_user_e2,
-       CAST(sum(lifespan_days) * 100 // count(*) AS BIGINT)
-         AS lifespan_per_user_e2
-FROM s GROUP BY 1, 2 ORDER BY seg_ord
-"""
-
-
-@register("q_events_lifecycle_segments", _LIFECYCLE_SQL)
-def q_events_lifecycle_segments(spark, sf_dir):
-    """User-lifecycle segmentation by engagement depth: light (<25
-    active days), casual (<27), regular (<29), power (≥29) — with per-
-    segment event volume, mean events / active days / lifespan per user
-    as exact e2 fixed-point. The cohort-size × engagement table a
-    retention review starts from. One user-keyed aggregate (the distinct
-    active-day count rides the same shuffle), then a 4-row rollup."""
-    e = _t(spark, sf_dir, "events")
-    u = (e.groupBy("user_id")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n_events"),
-              F.count_distinct(F.col("ts").cast("date"))
-              .cast("decimal(38,0)").alias("active_days"),
-              (F.datediff(F.max("ts").cast("date"),
-                          F.min("ts").cast("date")) + 1)
-              .cast("decimal(38,0)").alias("lifespan_days")))
-    ad = F.col("active_days")
-    s = u.select(
-        F.when(ad < 25, 1).when(ad < 27, 2).when(ad < 29, 3)
-        .otherwise(4).alias("seg_ord"),
-        F.when(ad < 25, "light").when(ad < 27, "casual")
-        .when(ad < 29, "regular").otherwise("power").alias("segment"),
-        "n_events", "active_days", "lifespan_days")
-    return (s.groupBy("seg_ord", "segment")
-            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("nu"),
-                 F.sum("n_events").alias("ne"),
-                 F.sum("active_days").alias("na"),
-                 F.sum("lifespan_days").alias("nl"))
-            .select("seg_ord", "segment",
-                    F.col("nu").cast("long").alias("n_users"),
-                    F.col("ne").cast("long").alias("n_events"),
-                    F.expr("CAST(ne * 100 div nu AS BIGINT)")
-                    .alias("events_per_user_e2"),
-                    F.expr("CAST(na * 100 div nu AS BIGINT)")
-                    .alias("active_days_per_user_e2"),
-                    F.expr("CAST(nl * 100 div nu AS BIGINT)")
-                    .alias("lifespan_per_user_e2"))
-            .orderBy("seg_ord"))
-
-
-_PRIORITY_DRIFT_SQL = """
-WITH mp AS (
-  SELECT strftime(date_trunc('month', o_orderdate), '%Y-%m') AS month,
-         o_orderpriority AS prio, CAST(count(*) AS HUGEINT) AS n
-  FROM orders GROUP BY 1, 2
-), m AS (SELECT month, sum(n) AS nm FROM mp GROUP BY 1),
-p AS (SELECT prio, sum(n) AS np FROM mp GROUP BY 1),
-g AS (SELECT sum(n) AS ng FROM mp)
-SELECT mp.month, CAST(m.nm AS BIGINT) AS n_orders,
-       CAST(sum(abs(mp.n * 1000000 // m.nm
-                    - p.np * 1000000 // (SELECT ng FROM g))) // 2
-            AS BIGINT) AS tv_drift_e6
-FROM mp JOIN m ON m.month = mp.month JOIN p ON p.prio = mp.prio
-GROUP BY mp.month, m.nm ORDER BY mp.month
-"""
-
-
-@register("q_orders_priority_drift", _PRIORITY_DRIFT_SQL)
-def q_orders_priority_drift(spark, sf_dir):
-    """Monthly order-priority mix drift: total-variation distance between
-    each month's priority distribution and the corpus-wide mix, as
-    exact e6 fixed-point (both shares floored to e6 before |·|, so the
-    hash is engine-independent) — the mix-shift monitor that catches a
-    quarter-end rush or an upstream enum change; the relational sibling
-    of text_unigram_drift. One month×priority aggregate feeds month /
-    priority / global marginals — everything after the first aggregate
-    is broadcast-sized."""
-    o = _t(spark, sf_dir, "orders")
-    mp = (o.groupBy(F.date_format(F.date_trunc("month", F.col("o_orderdate")
-                                                .cast("date")), "yyyy-MM")
-                    .alias("month"),
-                    F.col("o_orderpriority").alias("prio"))
-          .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n")))
-    m = mp.groupBy("month").agg(F.sum("n").alias("nm"))
-    p = mp.groupBy("prio").agg(F.sum("n").alias("np"))
-    g = mp.agg(F.sum("n").alias("ng"))
-    return (mp.join(F.broadcast(m), "month")
-            .join(F.broadcast(p), "prio")
-            .crossJoin(F.broadcast(g))
-            .groupBy("month")
-            .agg(F.max(F.col("nm")).alias("nmx"),
-                 F.sum(F.abs(F.expr("n * 1000000 div nm")
-                             - F.expr("np * 1000000 div ng")))
-                 .alias("tv"))
-            .select("month", F.col("nmx").cast("long").alias("n_orders"),
-                    F.expr("CAST(tv div 2 AS BIGINT)").alias("tv_drift_e6"))
-            .orderBy("month"))
-
-
-_READABILITY_SQL = """
-WITH s AS (
-  SELECT lang,
-         CAST(len(list_filter(string_split_regex(trim(text), '[.!?]+\\s+'),
-                              x -> length(x) > 0)) AS HUGEINT) AS n_sent,
-         CAST(len(string_split_regex(trim(lower(text)), '\\s+'))
-              AS HUGEINT) AS n_words,
-         CAST(len(regexp_extract_all(lower(text), '[aeiou]+'))
-              AS HUGEINT) AS n_syll
-  FROM documents
-), a AS (
-  SELECT lang, CAST(count(*) AS HUGEINT) AS n_docs,
-         sum(n_sent) AS ns, sum(n_words) AS nw, sum(n_syll) AS nsy
-  FROM s GROUP BY 1
-)
-SELECT lang, CAST(n_docs AS BIGINT) AS n_docs,
-       CAST(nsy * 100 // nw AS BIGINT) AS syllables_per_word_e2,
-       CAST(39 * nw // ns + 1180 * nsy // nw - 1559 AS BIGINT)
-         AS fk_grade_e2
-FROM a ORDER BY lang
-"""
-
-
-@register("text_readability", _READABILITY_SQL)
-def text_readability(spark, sf_dir):
-    """Flesch-Kincaid grade level per language, exact e2 fixed-point:
-    0.39·(words/sentence) + 11.8·(syllables/word) − 15.59, each term
-    floored at e2 before summing so both engines hash identically.
-    Syllables are vowel-group counts ([aeiou]+ runs — the standard
-    dictionary-free heuristic; groups never span whitespace, so one
-    whole-text regexp_extract_all equals the per-word sum). Sentences
-    and words reuse the corpus-wide splitters (text_sentence_profile).
-    The readability gate a children's-content or plain-language filter
-    applies; one narrow map + 5-key aggregate."""
-    d = _t(spark, sf_dir, "documents")
-    sents = F.size(F.filter(
-        F.split(F.trim(F.col("text")), r"[.!?]+\s+"),
-        lambda x: F.length(x) > 0)).cast("decimal(38,0)")
-    words = F.size(F.split(F.trim(F.lower("text")), r"\s+")) \
-        .cast("decimal(38,0)")
-    syll = F.size(F.expr("regexp_extract_all(lower(text), '[aeiou]+', 0)")) \
-        .cast("decimal(38,0)")
-    s = d.select("lang", sents.alias("n_sent"), words.alias("n_words"),
-                 syll.alias("n_syll"))
-    return (s.groupBy("lang")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                 F.sum("n_sent").alias("ns"), F.sum("n_words").alias("nw"),
-                 F.sum("n_syll").alias("nsy"))
-            .select("lang", "n_docs",
-                    F.expr("CAST(nsy * 100 div nw AS BIGINT)")
-                    .alias("syllables_per_word_e2"),
-                    F.expr("CAST(39 * nw div ns + 1180 * nsy div nw - 1559"
-                           " AS BIGINT)").alias("fk_grade_e2"))
-            .orderBy("lang"))
-
-
-_CENTROID_DIST_SQL = """
-WITH ix AS (
-  SELECT label, embedding,
-         unnest(range(1, len(embedding) + 1)) AS i
-  FROM embeddings
-), v AS (
-  SELECT label, i,
-         CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000 + 0.5)
-              AS HUGEINT) AS q
-  FROM ix
-), c AS (
-  SELECT label, i, sum(q) // CAST(count(*) AS HUGEINT) AS cq
-  FROM v GROUP BY 1, 2
-)
-SELECT a.label AS label_a, b.label AS label_b,
-       CAST(sum((a.cq - b.cq) * (a.cq - b.cq)) AS BIGINT) AS d2_e12
-FROM c a JOIN c b ON b.i = a.i AND a.label < b.label
-GROUP BY 1, 2 ORDER BY label_a, label_b
-"""
-
-
-@register("ann_centroid_distances", _CENTROID_DIST_SQL)
-def ann_centroid_distances(spark, sf_dir):
-    """Pairwise squared L2 distances between label centroids — the
-    class-separation matrix read next to ann_silhouette_simplified
-    (close centroids = confusable classes, the first thing to check
-    before trusting a nearest-centroid classifier). Centroids as
-    truncating integer means over the e6-quantized coordinates (same
-    `div`/`//` discipline as ann_kmeans_update); the pairwise join runs
-    on k·d rows — broadcast-sized regardless of corpus size, so the
-    only data-scale work is the (label, dim) mean aggregate."""
-    embs = _t(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * 1000000 + F.lit(0.5))
-        .cast("decimal(38,0)"))
-    v = (embs.select("label", qv.alias("q"))
-         .select("label", F.posexplode("q").alias("i", "qd")))
-    c = (v.groupBy("label", "i")
-         .agg(F.sum("qd").alias("s"),
-              F.count(F.lit(1)).cast("decimal(38,0)").alias("n"))
-         .select("label", "i", F.expr("s div n").alias("cq")))
-    b = c.select(F.col("label").alias("label_b"), F.col("i").alias("bi"),
-                 F.col("cq").alias("bq"))
-    return (c.join(F.broadcast(b), (F.col("i") == F.col("bi"))
-                   & (F.col("label") < F.col("label_b")))
-            .groupBy(F.col("label").alias("label_a"), "label_b")
-            .agg(F.sum((F.col("cq") - F.col("bq"))
-                       * (F.col("cq") - F.col("bq"))).cast("long")
-                 .alias("d2_e12"))
-            .orderBy("label_a", "label_b"))
-
-
-_PREFIX_COLLISION_SQL = """
-WITH p AS (
-  SELECT source, substring(text, 1, 64) AS prefix FROM documents
-), g AS (
-  SELECT source, prefix, CAST(count(*) AS HUGEINT) AS k
-  FROM p GROUP BY 1, 2
-)
-SELECT source, CAST(sum(k) AS BIGINT) AS n_docs,
-       CAST(count(*) AS BIGINT) AS n_prefixes,
-       CAST(sum(CASE WHEN k > 1 THEN k ELSE 0 END) AS BIGINT)
-         AS docs_in_collisions,
-       CAST(max(k) AS BIGINT) AS max_group,
-       CAST(sum(CASE WHEN k > 1 THEN k - 1 ELSE 0 END) * 1000000
-            // sum(k) AS BIGINT) AS dup_rate_e6
-FROM g GROUP BY 1 ORDER BY source
-"""
-
-
-@register("dedup_prefix_collisions", _PREFIX_COLLISION_SQL)
-def dedup_prefix_collisions(spark, sf_dir):
-    """First-64-char prefix collision report per source — the cheapest
-    near-dup tripwire there is (one map + one aggregate, no shingling),
-    run BEFORE the MinHash pipeline to size the dedup problem: docs
-    sharing a prefix, the largest collision group, and the implied
-    duplicate rate (k−1 removable per group, e6). A map-side-combined
-    (source, prefix) count then a per-source rollup; prefixes cap key
-    width at 64 bytes so the shuffle stays narrow at 100 TB."""
-    d = _t(spark, sf_dir, "documents")
-    g = (d.select("source", F.substring("text", 1, 64).alias("prefix"))
-         .groupBy("source", "prefix")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("k")))
-    return (g.groupBy("source")
-            .agg(F.sum("k").alias("nd"),
-                 F.count(F.lit(1)).cast("long").alias("n_prefixes"),
-                 F.sum(F.when(F.col("k") > 1, F.col("k")).otherwise(0))
-                 .cast("long").alias("docs_in_collisions"),
-                 F.max("k").cast("long").alias("max_group"),
-                 F.sum(F.when(F.col("k") > 1, F.col("k") - 1).otherwise(0))
-                 .cast("decimal(38,0)").alias("dup"))
-            .select("source", F.col("nd").cast("long").alias("n_docs"),
-                    "n_prefixes", "docs_in_collisions", "max_group",
-                    F.expr("CAST(dup * 1000000 div nd AS BIGINT)")
-                    .alias("dup_rate_e6"))
-            .orderBy("source"))
-
-
-_PRICE_SIZE_SQL = """
-WITH p AS (
-  SELECT p_brand, CAST(p_size AS HUGEINT) AS x,
-         CAST(CAST(p_retailprice AS DECIMAL(18,2)) * 100 AS HUGEINT) AS y
-  FROM part
-), a AS (
-  SELECT p_brand, CAST(count(*) AS HUGEINT) AS n,
-         sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx
-  FROM p GROUP BY 1
-)
-SELECT p_brand, CAST(n AS BIGINT) AS n,
-       CAST((n * sxy - sx * sy) * 1000000 // (n * sxx - sx * sx)
-            AS BIGINT) AS slope_cents_per_size_e6,
-       CAST(sy // n AS BIGINT) AS mean_price_cents
-FROM a ORDER BY p_brand
-"""
-
-
-@register("q_part_price_size_trend", _PRICE_SIZE_SQL)
-def q_part_price_size_trend(spark, sf_dir):
-    """Per-brand OLS slope of retail price (integer cents) on part size —
-    the price-ladder check a catalog team runs (does bigger cost more,
-    and is the gradient consistent across brands?). Closed-form exact-
-    integer least squares: slope = (nΣxy − ΣxΣy)/(nΣx² − (Σx)²), e6
-    fixed-point with truncating division identical in both engines —
-    the same algebra as q_events_ols_trend on a new table and grouping.
-    One map-side-combined aggregate per brand; no window, no join."""
-    p = _t(spark, sf_dir, "part")
-    v = p.select("p_brand",
-                 F.col("p_size").cast("decimal(38,0)").alias("x"),
-                 (F.col("p_retailprice").cast("decimal(18,2)") * 100)
-                 .cast("decimal(38,0)").alias("y"))
-    a = (v.groupBy("p_brand")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-              F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-              F.sum(F.col("x") * F.col("y")).alias("sxy"),
-              F.sum(F.col("x") * F.col("x")).alias("sxx")))
-    return (a.select("p_brand", F.col("n").cast("long").alias("n"),
-                     F.expr("CAST((n * sxy - sx * sy) * 1000000"
-                            " div (n * sxx - sx * sx) AS BIGINT)")
-                     .alias("slope_cents_per_size_e6"),
-                     F.expr("CAST(sy div n AS BIGINT)")
-                     .alias("mean_price_cents"))
-            .orderBy("p_brand"))
-
-
-_STICKINESS_SQL = """
-WITH d AS (
-  SELECT strftime(date_trunc('month', ts), '%Y-%m') AS month,
-         CAST(ts AS DATE) AS day, user_id
-  FROM events GROUP BY 1, 2, 3
-), dau AS (
-  SELECT month, day, CAST(count(*) AS HUGEINT) AS dau
-  FROM d GROUP BY 1, 2
-), mau AS (
-  SELECT month, CAST(count(DISTINCT user_id) AS HUGEINT) AS mau
-  FROM d GROUP BY 1
-)
-SELECT dau.month, CAST(count(*) AS BIGINT) AS n_days,
-       CAST(max(mau.mau) AS BIGINT) AS mau,
-       CAST(sum(dau.dau) * 100 // count(*) AS BIGINT) AS avg_dau_e2,
-       CAST(sum(dau.dau) * 1000000 // (count(*) * max(mau.mau))
-            AS BIGINT) AS stickiness_e6
-FROM dau JOIN mau ON mau.month = dau.month
-GROUP BY dau.month ORDER BY dau.month
-"""
-
-
-@register("q_events_stickiness", _STICKINESS_SQL)
-def q_events_stickiness(spark, sf_dir):
-    """DAU/MAU stickiness per month — mean daily actives over monthly
-    actives (e6 fixed-point; 1e6 = every monthly user active every
-    day), the single engagement number product reviews track. One
-    distinct (month, day, user) projection feeds both marginals: the
-    day-level count and the month-level distinct, joined back on the
-    ~month-cardinality key. Exact integers; the only data-scale work
-    is the initial distinct, map-side-combinable on its 3-column key."""
-    e = _t(spark, sf_dir, "events")
-    d = (e.select(F.date_format(F.date_trunc("month", "ts"), "yyyy-MM")
-                  .alias("month"),
-                  F.col("ts").cast("date").alias("day"), "user_id")
-         .distinct())
-    dau = (d.groupBy("month", "day")
-           .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("dau")))
-    mau = (d.groupBy("month")
-           .agg(F.count_distinct("user_id").cast("decimal(38,0)")
-                .alias("mau")))
-    return (dau.join(F.broadcast(mau), "month")
-            .groupBy("month")
-            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("nd"),
-                 F.sum("dau").alias("sd"), F.max("mau").alias("mx"))
-            .select("month", F.col("nd").cast("long").alias("n_days"),
-                    F.col("mx").cast("long").alias("mau"),
-                    F.expr("CAST(sd * 100 div nd AS BIGINT)")
-                    .alias("avg_dau_e2"),
-                    F.expr("CAST(sd * 1000000 div (nd * mx) AS BIGINT)")
-                    .alias("stickiness_e6"))
-            .orderBy("month"))
-
-
-_SHUFFLE_DECOR_SQL = """
-WITH b AS (
-  SELECT CAST(('0x' || substring(md5('e0:' || doc_id), 1, 2)) AS INTEGER)
-           AS b0,
-         CAST(('0x' || substring(md5('e1:' || doc_id), 1, 2)) AS INTEGER)
-           AS b1
-  FROM documents
-), j AS (
-  SELECT b0, b1, CAST(count(*) AS HUGEINT) AS c FROM b GROUP BY 1, 2
-), r AS (SELECT b0, sum(c) AS rc FROM j GROUP BY 1),
-s AS (SELECT b1, sum(c) AS cc FROM j GROUP BY 1),
-g AS (SELECT sum(c) AS n FROM j)
-SELECT CAST((SELECT n FROM g) AS BIGINT) AS n_docs,
-       CAST(count(*) AS BIGINT) AS n_cells,
-       CAST(sum(CASE WHEN j.b0 = j.b1 THEN j.c ELSE 0 END) * 1000000
-            // (SELECT n FROM g) AS BIGINT) AS same_bucket_e6,
-       CAST(sum(abs(j.c * (SELECT n FROM g) - r.rc * s.cc)) * 1000000
-            // (2 * (SELECT n FROM g) * (SELECT n FROM g)) AS BIGINT)
-         AS tv_independence_e6
-FROM j JOIN r ON r.b0 = j.b0 JOIN s ON s.b1 = j.b1
-"""
-
-
-@register("data_shuffle_decorrelation", _SHUFFLE_DECOR_SQL)
-def data_shuffle_decorrelation(spark, sf_dir):
-    """Epoch-shuffle decorrelation audit: training pipelines reshuffle
-    per epoch by ordering on hash(epoch‖doc_id) — this measures whether
-    epoch-0 and epoch-1 orders are actually independent. Each doc maps
-    to a 256-way bucket per epoch (first md5 byte); the audit reports
-    the same-bucket rate (expected 1/256 ≈ 3906 e6) and the total-
-    variation distance between the joint bucket distribution and the
-    product of its marginals (0 = independent), both exact integers.
-    No global sort anywhere — the metric is a 256×256-cell aggregate,
-    so the audit itself scales to any corpus."""
-    d = _t(spark, sf_dir, "documents")
-    b0 = F.conv(F.substring(F.md5(F.concat(F.lit("e0:"),
-                                           F.col("doc_id").cast("string"))),
-                            1, 2), 16, 10).cast("int")
-    b1 = F.conv(F.substring(F.md5(F.concat(F.lit("e1:"),
-                                           F.col("doc_id").cast("string"))),
-                            1, 2), 16, 10).cast("int")
-    j = (d.select(b0.alias("b0"), b1.alias("b1"))
-         .groupBy("b0", "b1")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("c")))
-    r = j.groupBy("b0").agg(F.sum("c").alias("rc"))
-    s = j.groupBy("b1").agg(F.sum("c").alias("cc"))
-    g = j.agg(F.sum("c").alias("n"))
-    return (j.join(F.broadcast(r), "b0").join(F.broadcast(s), "b1")
-            .crossJoin(F.broadcast(g))
-            .agg(F.max("n").alias("nn"),
-                 F.count(F.lit(1)).cast("long").alias("n_cells"),
-                 F.sum(F.when(F.col("b0") == F.col("b1"), F.col("c"))
-                       .otherwise(0)).alias("sb"),
-                 F.sum(F.abs(F.col("c") * F.col("n")
-                             - F.col("rc") * F.col("cc"))).alias("tv"))
-            .select(F.col("nn").cast("long").alias("n_docs"), "n_cells",
-                    F.expr("CAST(sb * 1000000 div nn AS BIGINT)")
-                    .alias("same_bucket_e6"),
-                    F.expr("CAST(tv * 1000000 div (2 * nn * nn) AS BIGINT)")
-                    .alias("tv_independence_e6")))
-
-
-_BAL_SPEND_SQL = """
-WITH cs AS (
-  SELECT c.c_mktsegment AS segment,
-         CAST(CAST(c.c_acctbal AS DECIMAL(18,2)) * 100 AS HUGEINT) AS x,
-         coalesce(o.spend, CAST(0 AS HUGEINT)) AS y
-  FROM customer c LEFT JOIN (
-    SELECT o_custkey,
-           sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS HUGEINT))
-             AS spend
-    FROM orders GROUP BY 1
-  ) o ON o.o_custkey = c.c_custkey
-), a AS (
-  SELECT segment, CAST(count(*) AS HUGEINT) AS n,
-         sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx
-  FROM cs GROUP BY 1
-)
-SELECT segment, CAST(n AS BIGINT) AS n_customers,
-       CAST((n * sxy - sx * sy) * 1000 // (n * sxx - sx * sx)
-            AS BIGINT) AS slope_e3,
-       CAST(sy // n AS BIGINT) AS mean_spend_cents
-FROM a ORDER BY segment
-"""
-
-
-@register("q_customer_balance_spend_trend", _BAL_SPEND_SQL)
-def q_customer_balance_spend_trend(spark, sf_dir):
-    """Does account balance predict spend? Per market segment, the exact
-    OLS slope of lifetime spend on account balance (both integer
-    cents; slope e3 ≈ cents-per-cent ≋ dollars-per-dollar ×1000) —
-    the CRM question behind credit-line and tiering decisions.
-    Customers with no orders stay in the regression at spend 0 via a
-    LEFT join (dropping them biases the slope up). Signed sums; the
-    customer↔orders join runs on the natural custkey shuffle, then one
-    5-key combinable aggregate."""
-    c = _t(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment",
-        (F.col("c_acctbal").cast("decimal(18,2)") * 100)
-        .cast("decimal(38,0)").alias("x"))
-    o = (_t(spark, sf_dir, "orders")
-         .groupBy("o_custkey")
-         .agg(F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100)
-                    .cast("decimal(38,0)")).alias("spend")))
-    cs = (c.join(o, c["c_custkey"] == o["o_custkey"], "left")
-          .select(F.col("c_mktsegment").alias("segment"), "x",
-                  F.coalesce(F.col("spend"),
-                             F.lit(0).cast("decimal(38,0)")).alias("y")))
-    a = (cs.groupBy("segment")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-              F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-              F.sum(F.col("x") * F.col("y")).alias("sxy"),
-              F.sum(F.col("x") * F.col("x")).alias("sxx")))
-    return (a.select("segment", F.col("n").cast("long").alias("n_customers"),
-                     F.expr("CAST((n * sxy - sx * sy) * 1000"
-                            " div (n * sxx - sx * sx) AS BIGINT)")
-                     .alias("slope_e3"),
-                     F.expr("CAST(sy div n AS BIGINT)")
-                     .alias("mean_spend_cents"))
-            .orderBy("segment"))
-
-
-_SOURCE_TV_SQL = """
-WITH w AS (
-  SELECT source,
-         unnest(string_split_regex(trim(lower(text)), '\\s+')) AS term
-  FROM documents
-), tf AS (
-  SELECT term, CAST(count(*) AS HUGEINT) AS f FROM w GROUP BY 1
-), top AS (
-  SELECT term FROM tf ORDER BY f DESC, term LIMIT 200
-), sc AS (
-  SELECT w.source, w.term, CAST(count(*) AS HUGEINT) AS c
-  FROM w JOIN top ON top.term = w.term GROUP BY 1, 2
-), st AS (SELECT source, sum(c) AS n FROM sc GROUP BY 1),
-grid AS (
-  SELECT st.source, top.term, coalesce(sc.c, 0) AS c, st.n
-  FROM st CROSS JOIN top
-  LEFT JOIN sc ON sc.source = st.source AND sc.term = top.term
-)
-SELECT a.source AS source_a, b.source AS source_b,
-       CAST(sum(abs(a.c * 1000000 // a.n - b.c * 1000000 // b.n)) // 2
-            AS BIGINT) AS tv_e6
-FROM grid a JOIN grid b ON b.term = a.term AND a.source < b.source
-GROUP BY 1, 2 ORDER BY source_a, source_b
-"""
-
-
-@register("text_source_tv_matrix", _SOURCE_TV_SQL)
-def text_source_tv_matrix(spark, sf_dir):
-    """Pairwise total-variation distance between sources' unigram
-    distributions over the corpus top-200 vocabulary (shares floored to
-    e6 before |·| so both engines hash identically) — the domain-
-    similarity matrix a data-mixing plan reads to decide which sources
-    are interchangeable and which add diversity; the pairwise
-    completion of text_unigram_drift (each-source-vs-corpus). The
-    top-200 cap bounds the all-pairs stage at |sources|²·200 rows
-    regardless of corpus size; term counts stay map-side-combinable."""
-    d = _t(spark, sf_dir, "documents")
-    w = d.select("source",
-                 F.explode(F.split(F.trim(F.lower("text")), r"\s+"))
-                 .alias("term"))
-    tf = w.groupBy("term").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("f"))
-    top = tf.orderBy(F.col("f").desc(), "term").limit(200).select("term")
-    sc = (w.join(F.broadcast(top), "term")
-          .groupBy("source", "term")
-          .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("c")))
-    st = sc.groupBy("source").agg(F.sum("c").alias("n"))
-    grid = (st.crossJoin(F.broadcast(top))
-            .join(sc, ["source", "term"], "left")
-            .select("source", "term",
-                    F.coalesce(F.col("c"), F.lit(0).cast("decimal(38,0)"))
-                    .alias("c"), "n"))
-    b = grid.select(F.col("source").alias("source_b"),
-                    F.col("term").alias("bterm"),
-                    F.col("c").alias("bc"), F.col("n").alias("bn"))
-    return (grid.join(b, (F.col("term") == F.col("bterm"))
-                      & (F.col("source") < F.col("source_b")))
-            .groupBy(F.col("source").alias("source_a"), "source_b")
-            .agg(F.sum(F.abs(F.expr("c * 1000000 div n")
-                             - F.expr("bc * 1000000 div bn"))).alias("tv"))
-            .select("source_a", "source_b",
-                    F.expr("CAST(tv div 2 AS BIGINT)").alias("tv_e6"))
-            .orderBy("source_a", "source_b"))
-
-
-_PEAK_CONCURRENCY_SQL = """
-WITH s AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER
-                (PARTITION BY user_id, CAST(ts AS DATE)
-                 ORDER BY ts, event_id) IS NULL
-              OR epoch(ts) - epoch(lag(ts) OVER
-                (PARTITION BY user_id, CAST(ts AS DATE)
-                 ORDER BY ts, event_id)) > 1800
-         THEN 1 ELSE 0 END AS new_s
-  FROM events
-), sid AS (
-  SELECT user_id, ts, CAST(ts AS DATE) AS day,
-         sum(new_s) OVER (PARTITION BY user_id, CAST(ts AS DATE)
-                          ORDER BY ts, event_id
-                          ROWS UNBOUNDED PRECEDING) AS sn
-  FROM s
-), sess AS (
-  SELECT day, user_id, sn, min(ts) AS t0, max(ts) AS t1
-  FROM sid GROUP BY 1, 2, 3
-), bounds AS (
-  SELECT day, t0 AS t, CAST(1 AS BIGINT) AS delta, user_id, sn FROM sess
-  UNION ALL
-  SELECT day, t1, CAST(-1 AS BIGINT), user_id, sn FROM sess
-), run AS (
-  SELECT day,
-         sum(delta) OVER (PARTITION BY day
-                          ORDER BY t, delta, user_id, sn
-                          ROWS UNBOUNDED PRECEDING) AS conc
-  FROM bounds
-)
-SELECT run.day, CAST(max(run.conc) AS BIGINT) AS peak_concurrent,
-       CAST(max(ns.n) AS BIGINT) AS n_sessions
-FROM run JOIN (SELECT day, count(*) AS n FROM sess GROUP BY 1) ns
-  ON ns.day = run.day
-GROUP BY run.day ORDER BY run.day
-"""
-
-
-@register("q_events_peak_concurrency", _PEAK_CONCURRENCY_SQL)
-def q_events_peak_concurrency(spark, sf_dir):
-    """Peak concurrent sessions per day — the capacity-planning number:
-    sessionize each user's day with the corpus 30-minute gap rule
-    (sessions day-local by construction, so every window partitions by
-    day — no global sort at any scale), emit +1/−1 at session start/
-    end, and take the max of the running sum. The boundary sweep's
-    tie-break (t, delta, user, session) is pinned in both engines:
-    −1 sorts before +1 at equal timestamps, so back-to-back sessions
-    don't double-count. Exact integers throughout."""
-    e = _t(spark, sf_dir, "events")
-    day = F.col("ts").cast("date")
-    w = Window.partitionBy("user_id", day.alias("day")) \
-        .orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    s = e.select("user_id", "ts", "event_id", day.alias("day"),
-                 F.when(prev.isNull()
-                        | ((F.unix_timestamp("ts")
-                            - F.unix_timestamp(prev)) > 1800), 1)
-                 .otherwise(0).alias("new_s"))
-    w2 = (Window.partitionBy("user_id", "day").orderBy("ts", "event_id")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    sid = s.select("user_id", "ts", "day",
-                   F.sum("new_s").over(w2).alias("sn"))
-    sess = (sid.groupBy("day", "user_id", "sn")
-            .agg(F.min("ts").alias("t0"), F.max("ts").alias("t1")))
-    bounds = (sess.select("day", F.col("t0").alias("t"),
-                          F.lit(1).cast("long").alias("delta"),
-                          "user_id", "sn")
-              .unionAll(sess.select("day", F.col("t1").alias("t"),
-                                    F.lit(-1).cast("long").alias("delta"),
-                                    "user_id", "sn")))
-    w3 = (Window.partitionBy("day").orderBy("t", "delta", "user_id", "sn")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    run = bounds.select("day", F.sum("delta").over(w3).alias("conc"))
-    ns = sess.groupBy("day").agg(F.count(F.lit(1)).alias("n"))
-    return (run.join(F.broadcast(ns), "day")
-            .groupBy("day")
-            .agg(F.max("conc").cast("long").alias("peak_concurrent"),
-                 F.max("n").cast("long").alias("n_sessions"))
-            .orderBy("day"))
-
-
-_WEEKLY_GROWTH_SQL = """
-WITH wk AS (
-  SELECT event_type, CAST(date_trunc('week', ts) AS DATE) AS week,
-         CAST(count(*) AS HUGEINT) AS n
-  FROM events GROUP BY 1, 2
-), g AS (
-  SELECT event_type, week, n,
-         lag(n) OVER (PARTITION BY event_type ORDER BY week) AS prev
-  FROM wk
-)
-SELECT event_type, week, CAST(n AS BIGINT) AS n,
-       CAST(prev AS BIGINT) AS prev_n,
-       CAST((n - prev) * 1000000 // prev AS BIGINT) AS growth_e6
-FROM g ORDER BY event_type, week
-"""
-
-
-@register("q_events_weekly_growth", _WEEKLY_GROWTH_SQL)
-def q_events_weekly_growth(spark, sf_dir):
-    """Week-over-week volume growth per event type (ISO weeks — Spark
-    and DuckDB both truncate to Monday), signed e6 fixed-point with
-    truncation toward zero in both engines; first week NULL. The
-    trend panel behind feature-adoption reviews. One type×week
-    aggregate off the scan, then a lag window partitioned by type —
-    never a global sort; week count bounds partition size."""
-    e = _t(spark, sf_dir, "events")
-    wk = (e.groupBy("event_type",
-                    F.date_trunc("week", "ts").cast("date").alias("week"))
-          .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n")))
-    w = Window.partitionBy("event_type").orderBy("week")
-    g = wk.select("event_type", "week", "n",
-                  F.lag("n").over(w).alias("prev"))
-    return (g.select("event_type", "week", F.col("n").cast("long").alias("n"),
-                     F.col("prev").cast("long").alias("prev_n"),
-                     F.expr("CAST((n - prev) * 1000000 div prev AS BIGINT)")
-                     .alias("growth_e6"))
-            .orderBy("event_type", "week"))
-
-
-_ABTEST_SQL = """
-WITH v AS (
-  SELECT event_type, user_id % 2 AS arm,
-         CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS HUGEINT) AS y
-  FROM events
-), a AS (
-  SELECT event_type,
-         CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS HUGEINT) AS na,
-         CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS HUGEINT) AS nb,
-         sum(CASE WHEN arm = 0 THEN y ELSE 0 END) AS sa,
-         sum(CASE WHEN arm = 1 THEN y ELSE 0 END) AS sb
-  FROM v GROUP BY 1
-)
-SELECT event_type, CAST(na AS BIGINT) AS n_a, CAST(nb AS BIGINT) AS n_b,
-       CAST(sa // na AS BIGINT) AS mean_a_e4,
-       CAST(sb // nb AS BIGINT) AS mean_b_e4,
-       CAST((sb * na - sa * nb) * 1000000 // (sa * nb) AS BIGINT)
-         AS lift_e6
-FROM a ORDER BY event_type
-"""
-
-
-@register("q_events_abtest_lift", _ABTEST_SQL)
-def q_events_abtest_lift(spark, sf_dir):
-    """A/B readout with user-hash bucketing: split users into two arms
-    by id parity (the deterministic stand-in for an experiment
-    assignment hash), then per event type report arm means (value at
-    exact e4 fixed-point) and the relative lift (s_b·n_a − s_a·n_b)/
-    (s_a·n_b) at e6 — computed from raw sums so no rounding enters
-    before the final division; signed truncation identical in both
-    engines. One map + per-type combinable aggregate; the arm split
-    adds zero shuffle because it's a map-side expression."""
-    e = _t(spark, sf_dir, "events")
-    v = e.select("event_type", (F.col("user_id") % 2).alias("arm"),
-                 (F.col("value").cast("decimal(18,4)") * 10000)
-                 .cast("decimal(38,0)").alias("y"))
-    z = F.lit(0).cast("decimal(38,0)")
-    a = (v.groupBy("event_type")
-         .agg(F.sum(F.when(F.col("arm") == 0, 1).otherwise(0))
-              .cast("decimal(38,0)").alias("na"),
-              F.sum(F.when(F.col("arm") == 1, 1).otherwise(0))
-              .cast("decimal(38,0)").alias("nb"),
-              F.sum(F.when(F.col("arm") == 0, F.col("y")).otherwise(z))
-              .alias("sa"),
-              F.sum(F.when(F.col("arm") == 1, F.col("y")).otherwise(z))
-              .alias("sb")))
-    return (a.select("event_type", F.col("na").cast("long").alias("n_a"),
-                     F.col("nb").cast("long").alias("n_b"),
-                     F.expr("CAST(sa div na AS BIGINT)").alias("mean_a_e4"),
-                     F.expr("CAST(sb div nb AS BIGINT)").alias("mean_b_e4"),
-                     F.expr("CAST((sb * na - sa * nb) * 1000000"
-                            " div (sa * nb) AS BIGINT)").alias("lift_e6"))
-            .orderBy("event_type"))
-
-
-_SUPPLIER_BREADTH_SQL = """
-WITH s AS (
-  SELECT l_suppkey,
-         CAST(count(DISTINCT l_partkey) AS BIGINT) AS n_parts,
-         CAST(count(DISTINCT l_orderkey) AS BIGINT) AS n_orders,
-         sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS HUGEINT)
-             * CAST(10000 - CAST(CAST(l_discount AS DECIMAL(18,4)) * 10000
-                                 AS HUGEINT) AS HUGEINT)) AS rev_e6
-  FROM lineitem GROUP BY 1
-)
-SELECT l_suppkey AS suppkey, n_parts, n_orders,
-       CAST(rev_e6 AS BIGINT) AS revenue_e6
-FROM s ORDER BY rev_e6 DESC, suppkey LIMIT 20
-"""
-
-
-@register("q_supplier_part_breadth", _SUPPLIER_BREADTH_SQL)
-def q_supplier_part_breadth(spark, sf_dir):
-    """Top-20 suppliers by discounted revenue with their catalog breadth
-    (distinct parts shipped, distinct orders touched) — the supplier-
-    concentration view procurement reads (is revenue broad or carried
-    by one SKU?). Revenue is exact e6 fixed-point: cents × basis-point
-    discount complement, never a float; two distinct-counts ride the
-    same supplier-key shuffle as the sum. Top-20 is a distributed
-    TakeOrdered with a (revenue desc, suppkey) tie-break pinned in
-    both engines."""
-    li = _t(spark, sf_dir, "lineitem")
-    cents = (F.col("l_extendedprice").cast("decimal(18,2)") * 100) \
-        .cast("decimal(38,0)")
-    bps = (F.lit(10000) - (F.col("l_discount").cast("decimal(18,4)")
-                           * 10000).cast("decimal(38,0)"))
-    s = (li.groupBy("l_suppkey")
-         .agg(F.count_distinct("l_partkey").cast("long").alias("n_parts"),
-              F.count_distinct("l_orderkey").cast("long").alias("n_orders"),
-              F.sum(cents * bps).alias("rev")))
-    return (s.select(F.col("l_suppkey").alias("suppkey"), "n_parts",
-                     "n_orders", F.col("rev").cast("long")
-                     .alias("revenue_e6"))
-            .orderBy(F.col("revenue_e6").desc(), "suppkey").limit(20))
-
-
-_KMEANS_INERTIA_SQL = """
-WITH ix AS (
-  SELECT vec_id, embedding,
-         unnest(range(1, len(embedding) + 1)) AS i
-  FROM embeddings
-), v AS (
-  SELECT vec_id, i,
-         CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000 + 0.5)
-              AS HUGEINT) AS q
-  FROM ix
-), c AS (
-  SELECT vec_id AS cid, i, q AS cq FROM v WHERE vec_id < 8
-), d AS (
-  SELECT v.vec_id, c.cid, sum((v.q - c.cq) * (v.q - c.cq)) AS d2
-  FROM v JOIN c USING (i) GROUP BY 1, 2
-), mem AS (
-  SELECT vec_id, cid, d2 FROM (
-    SELECT vec_id, cid, d2,
-           row_number() OVER (PARTITION BY vec_id ORDER BY d2, cid) AS rn
-    FROM d) WHERE rn = 1
-)
-SELECT CAST(cid AS BIGINT) AS cluster, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(d2) AS BIGINT) AS inertia_e12,
-       CAST(sum(d2) // CAST(count(*) AS HUGEINT) AS BIGINT)
-         AS mean_d2_e12
-FROM mem GROUP BY 1 ORDER BY cluster
-"""
-
-
-@register("ann_kmeans_inertia", _KMEANS_INERTIA_SQL)
-def ann_kmeans_inertia(spark, sf_dir):
-    """Per-cluster inertia (within-cluster sum of squared distances to
-    the assigned centroid) — the objective k-means minimizes and the
-    elbow-curve statistic; read with ann_kmeans_update's shift column
-    it gives the full Lloyd-iteration dashboard. Assignment identical
-    to ann_kmeans_assign over e6-quantized integers; then a k-row
-    aggregate of the already-computed min distances (no extra pass
-    over the vectors). Broadcast centroids, corpus never re-shuffled."""
-    embs = _t(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * 1000000 + F.lit(0.5))
-        .cast("decimal(38,0)"))
-    v = embs.select("vec_id", qv.alias("q"))
-    cents = (v.filter(F.col("vec_id") < 8)
-             .select(F.col("vec_id").alias("cid"), F.col("q").alias("cq")))
-    d2 = (v.crossJoin(F.broadcast(cents))
-          .select("vec_id", "cid",
-                  F.aggregate(
-                      F.zip_with("q", "cq", lambda a, b: (a - b) * (a - b)),
-                      F.lit(0).cast("decimal(38,0)"),
-                      lambda acc, x: acc + x).alias("d2")))
-    mem = (d2.groupBy("vec_id")
-           .agg(F.min(F.struct(F.col("d2"), F.col("cid"))).alias("m"))
-           .select(F.col("m.cid").alias("cluster"),
-                   F.col("m.d2").alias("d2")))
-    return (mem.groupBy("cluster")
-            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("nn"),
-                 F.sum("d2").alias("sd"))
-            .select(F.col("cluster").cast("long").alias("cluster"),
-                    F.col("nn").cast("long").alias("n"),
-                    F.col("sd").cast("long").alias("inertia_e12"),
-                    F.expr("CAST(sd div nn AS BIGINT)").alias("mean_d2_e12"))
-            .orderBy("cluster"))
-
-
-_VARIANCE_DECOMP_SQL = """
-WITH v AS (
-  SELECT event_type,
-         CAST(CAST(value AS DECIMAL(18,4)) * 10000 AS HUGEINT) AS y
-  FROM events
-), g AS (
-  SELECT event_type, CAST(count(*) AS HUGEINT) AS ng, sum(y) AS sg
-  FROM v GROUP BY 1
-), t AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(y) AS s, sum(y * y) AS q
-  FROM v
-)
-SELECT CAST(t.n AS BIGINT) AS n, CAST(count(*) AS BIGINT) AS n_groups,
-       CAST((sum(g.sg * g.sg * t.n // g.ng) - max(t.s) * max(t.s))
-            * 1000000 // (max(t.n) * max(t.q) - max(t.s) * max(t.s))
-            AS BIGINT) AS eta2_e6
-FROM g CROSS JOIN t GROUP BY t.n
-"""
-
-
-@register("q_events_variance_decomposition", _VARIANCE_DECOMP_SQL)
-def q_events_variance_decomposition(spark, sf_dir):
-    """One-way variance decomposition of event value by event type:
-    η² = SSB/SST (share of variance explained by the type, e6) — the
-    ANOVA effect size that says whether 'value differs by type' is
-    signal or noise, computed entirely from integer sums via
-    n·SST = nΣy² − (Σy)² and n·SSB = Σ_g(s_g²·n/n_g) − (Σy)², the
-    per-group term floored identically in both engines. Values at e4
-    fixed-point; one per-type aggregate plus one global aggregate over
-    the same map-side-combined pass shape — no window, no join fan-out
-    (the type×1 join is broadcast-trivial)."""
-    e = _t(spark, sf_dir, "events")
-    v = e.select("event_type",
-                 (F.col("value").cast("decimal(18,4)") * 10000)
-                 .cast("decimal(38,0)").alias("y"))
-    g = (v.groupBy("event_type")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("ng"),
-              F.sum("y").alias("sg")))
-    t = v.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-              F.sum("y").alias("s"),
-              F.sum(F.col("y") * F.col("y")).alias("q"))
-    return (g.crossJoin(F.broadcast(t))
-            .groupBy()
-            .agg(F.max("n").alias("nn"),
-                 F.count(F.lit(1)).cast("long").alias("n_groups"),
-                 # Spark's `div` yields BIGINT and this quotient (~1e23)
-                 # overflows long — exact decimal floor division instead
-                 # (a − a%b is divisible by b, so the result is exact).
-                 F.sum(F.expr(
-                     "CAST((sg * sg * n - (sg * sg * n) % ng) / ng"
-                     " AS DECIMAL(38,0))")).alias("ssbn"),
-                 F.max("s").alias("ss"), F.max("q").alias("qq"))
-            .select(F.col("nn").cast("long").alias("n"), "n_groups",
-                    F.expr("CAST((ssbn - ss * ss) * 1000000"
-                           " div (nn * qq - ss * ss) AS BIGINT)")
-                    .alias("eta2_e6")))
-
-
-_FANOUT_SQL = """
-WITH k AS (
-  SELECT l_orderkey, CAST(count(*) AS HUGEINT) AS n_lines
-  FROM lineitem GROUP BY 1
-), t AS (SELECT sum(n_lines) AS nl, CAST(count(*) AS HUGEINT) AS no FROM k)
-SELECT CAST(n_lines AS BIGINT) AS n_lines,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(count(*) * 1000000 // (SELECT no FROM t) AS BIGINT)
-         AS share_e6,
-       CAST((SELECT nl * 100 // no FROM t) AS BIGINT)
-         AS avg_lines_per_order_e2
-FROM k GROUP BY n_lines ORDER BY n_lines
-"""
-
-
-@register("q_order_fanout_profile", _FANOUT_SQL)
-def q_order_fanout_profile(spark, sf_dir):
-    """Join fan-out profile of the orders↔lineitem key: the full
-    lines-per-order histogram (share e6) plus the mean fan-out (e2) —
-    the statistic a planner (or a human) checks before trusting an
-    equi-join's output cardinality; the distribution-shaped complement
-    of q_skew_report's top-key view. One key-count aggregate, then a
-    histogram over the (tiny) distinct-fanout domain; the broadcast
-    scalar carries the corpus mean onto every row."""
-    li = _t(spark, sf_dir, "lineitem")
-    k = (li.groupBy("l_orderkey")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n_lines")))
-    t = k.agg(F.sum("n_lines").alias("nl"),
-              F.count(F.lit(1)).cast("decimal(38,0)").alias("no"))
-    return (k.groupBy("n_lines")
-            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("c"))
-            .crossJoin(F.broadcast(t))
-            .select(F.col("n_lines").cast("long").alias("n_lines"),
-                    F.col("c").cast("long").alias("n_orders"),
-                    F.expr("CAST(c * 1000000 div no AS BIGINT)")
-                    .alias("share_e6"),
-                    F.expr("CAST(nl * 100 div no AS BIGINT)")
-                    .alias("avg_lines_per_order_e2"))
-            .orderBy("n_lines"))
-
-
-_LABEL_SEPARATION_SQL = """
-WITH ix AS (
-  SELECT vec_id, label, embedding,
-         unnest(range(1, len(embedding) + 1)) AS i
-  FROM embeddings
-), v AS (
-  SELECT vec_id, label, i,
-         CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000 + 0.5)
-              AS HUGEINT) AS q
-  FROM ix
-), c AS (
-  SELECT label, i, sum(q) // CAST(count(*) AS HUGEINT) AS cq
-  FROM v GROUP BY 1, 2
-), intra AS (
-  SELECT v.label, v.vec_id, sum((v.q - c.cq) * (v.q - c.cq)) AS d2
-  FROM v JOIN c ON c.label = v.label AND c.i = v.i
-  GROUP BY 1, 2
-), ia AS (
-  SELECT label, CAST(count(*) AS HUGEINT) AS n,
-         sum(d2) // CAST(count(*) AS HUGEINT) AS mean_intra
-  FROM intra GROUP BY 1
-), inter AS (
-  SELECT a.label, min(x.d2) AS min_inter FROM (
-    SELECT a.label AS la, b.label AS lb,
-           sum((a.cq - b.cq) * (a.cq - b.cq)) AS d2
-    FROM c a JOIN c b ON b.i = a.i AND a.label != b.label
-    GROUP BY 1, 2
-  ) x JOIN (SELECT DISTINCT label FROM c) a ON a.label = x.la
-  GROUP BY 1
-)
-SELECT ia.label, CAST(ia.n AS BIGINT) AS n,
-       CAST(ia.mean_intra AS BIGINT) AS mean_intra_d2_e12,
-       CAST(inter.min_inter AS BIGINT) AS min_inter_d2_e12,
-       CAST(inter.min_inter * 1000000 // ia.mean_intra AS BIGINT)
-         AS separation_e6
-FROM ia JOIN inter ON inter.label = ia.label
-ORDER BY ia.label
-"""
-
-
-@register("ann_label_separation", _LABEL_SEPARATION_SQL)
-def ann_label_separation(spark, sf_dir):
-    """Per-label cluster separation: mean squared distance of members to
-    their own label centroid (compactness) vs the nearest other
-    centroid's squared distance, ratio e6 — a Davies-Bouldin-style
-    'is this class tight and far from its neighbours' report; >1e6
-    means the nearest foreign centroid is farther than the average
-    member. Same e6-quantized integer coordinates and truncating
-    centroid means as the rest of the ann_kmeans family. Centroids are
-    k·d rows (broadcast); the only corpus-scale pass is the member-to-
-    own-centroid distance, a zip_with on a broadcast-joined row."""
-    embs = _t(spark, sf_dir, "embeddings")
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") * 1000000 + F.lit(0.5))
-        .cast("decimal(38,0)"))
-    v = embs.select("vec_id", "label", qv.alias("q"))
-    ve = v.select("vec_id", "label", F.posexplode("q").alias("i", "qd"))
-    c = (ve.groupBy("label", "i")
-         .agg(F.sum("qd").alias("s"),
-              F.count(F.lit(1)).cast("decimal(38,0)").alias("n"))
-         .select("label", "i", F.expr("s div n").alias("cq")))
-    carr = (c.groupBy("label")
-            .agg(F.array_sort(F.collect_list(F.struct("i", "cq")))
-                 .alias("sc"))
-            .select("label", F.transform("sc", lambda s: s["cq"])
-                    .alias("cvec")))
-    intra = (v.join(F.broadcast(carr), "label")
-             .select("label",
-                     F.aggregate(
-                         F.zip_with("q", "cvec",
-                                    lambda a, b: (a - b) * (a - b)),
-                         F.lit(0).cast("decimal(38,0)"),
-                         lambda acc, x: acc + x).alias("d2")))
-    ia = (intra.groupBy("label")
-          .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-               F.sum("d2").alias("sd"))
-          .select("label", "n", F.expr("sd div n").alias("mean_intra")))
-    b = c.select(F.col("label").alias("lb"), F.col("i").alias("bi"),
-                 F.col("cq").alias("bq"))
-    inter = (c.join(F.broadcast(b), (F.col("i") == F.col("bi"))
-                    & (F.col("label") != F.col("lb")))
-             .groupBy("label", "lb")
-             .agg(F.sum((F.col("cq") - F.col("bq"))
-                        * (F.col("cq") - F.col("bq"))).alias("d2"))
-             .groupBy("label")
-             .agg(F.min("d2").alias("min_inter")))
-    return (ia.join(inter, "label")
-            .select("label", F.col("n").cast("long").alias("n"),
-                    F.col("mean_intra").cast("long")
-                    .alias("mean_intra_d2_e12"),
-                    F.col("min_inter").cast("long")
-                    .alias("min_inter_d2_e12"),
-                    F.expr("CAST(min_inter * 1000000 div mean_intra"
-                           " AS BIGINT)").alias("separation_e6"))
-            .orderBy("label"))
-
-
-_YOY_QUARTER_SQL = """
-WITH q AS (
-  SELECT CAST(year(o_orderdate) AS BIGINT) AS yr,
-         CAST(quarter(o_orderdate) AS BIGINT) AS qtr,
-         sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS HUGEINT))
-           AS cents
-  FROM orders GROUP BY 1, 2
-), g AS (
-  SELECT yr, qtr, cents,
-         lag(cents) OVER (PARTITION BY qtr ORDER BY yr) AS prev
-  FROM q
-)
-SELECT yr, qtr, CAST(cents AS BIGINT) AS revenue_cents,
-       CAST(prev AS BIGINT) AS prev_year_cents,
-       CAST((cents - prev) * 1000000 // prev AS BIGINT) AS yoy_e6
-FROM g ORDER BY yr, qtr
-"""
-
-
-@register("q_orders_yoy_quarter", _YOY_QUARTER_SQL)
-def q_orders_yoy_quarter(spark, sf_dir):
-    """Year-over-year quarterly revenue growth — the seasonality-robust
-    comparison finance actually reports (Q3 vs last Q3, not Q3 vs Q2):
-    lag is over the SAME quarter-of-year across years (window
-    partitioned by quarter number), so each partition holds ~7 rows.
-    Integer cents, signed e6 growth with identical truncation in both
-    engines; first year per quarter NULL. One quarter aggregate off
-    the scan, then the tiny partitioned lag."""
-    o = _t(spark, sf_dir, "orders")
-    q = (o.groupBy(F.year("o_orderdate").cast("long").alias("yr"),
-                   F.quarter("o_orderdate").cast("long").alias("qtr"))
-         .agg(F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100)
-                    .cast("decimal(38,0)")).alias("cents")))
-    w = Window.partitionBy("qtr").orderBy("yr")
-    g = q.select("yr", "qtr", "cents", F.lag("cents").over(w).alias("prev"))
-    return (g.select("yr", "qtr",
-                     F.col("cents").cast("long").alias("revenue_cents"),
-                     F.col("prev").cast("long").alias("prev_year_cents"),
-                     F.expr("CAST((cents - prev) * 1000000 div prev"
-                            " AS BIGINT)").alias("yoy_e6"))
-            .orderBy("yr", "qtr"))
-
-
-_ALPHA_PROFILE_SQL = """
-WITH s AS (
-  SELECT source, CAST(length(text) AS HUGEINT) AS n,
-         CAST(length(regexp_replace(text, '[^a-zA-Z]', '', 'g'))
-              AS HUGEINT) AS n_alpha,
-         CAST(length(regexp_replace(text, '[^0-9]', '', 'g'))
-              AS HUGEINT) AS n_digit,
-         CAST(length(text)
-              - length(regexp_replace(text, '\\s', '', 'g'))
-              AS HUGEINT) AS n_space,
-         CAST(len(string_split_regex(trim(text), '\\s+'))
-              AS HUGEINT) AS n_words
-  FROM documents
-)
-SELECT source, CAST(sum(n) AS BIGINT) AS n_chars,
-       CAST(sum(n_alpha) * 1000000 // sum(n) AS BIGINT) AS alpha_e6,
-       CAST(sum(n_digit) * 1000000 // sum(n) AS BIGINT) AS digit_e6,
-       CAST(sum(n_space) * 1000000 // sum(n) AS BIGINT) AS space_e6,
-       CAST((sum(n) - sum(n_space)) * 100 // sum(n_words) AS BIGINT)
-         AS avg_word_len_e2
-FROM s GROUP BY 1 ORDER BY source
-"""
-
-
-@register("text_alpha_profile", _ALPHA_PROFILE_SQL)
-def text_alpha_profile(spark, sf_dir):
-    """Character-class profile per source: alphabetic / digit /
-    whitespace density (e6) and mean word length (non-space chars per
-    token, e2) — the surface-statistics quality gate (C4 drops pages
-    with low alpha ratio; tables and logs flag as digit-heavy); the
-    per-source complement of text_lang_quality's per-language stopword
-    view. ASCII character classes spelled out ([a-zA-Z], [0-9]) so
-    Java regex and RE2 agree; one narrow map + per-source combinable
-    aggregate."""
-    d = _t(spark, sf_dir, "documents")
-    n = F.length("text").cast("decimal(38,0)")
-    alpha = F.length(F.regexp_replace("text", "[^a-zA-Z]", "")) \
-        .cast("decimal(38,0)")
-    digit = F.length(F.regexp_replace("text", "[^0-9]", "")) \
-        .cast("decimal(38,0)")
-    space = (F.length("text")
-             - F.length(F.regexp_replace("text", r"\s", ""))) \
-        .cast("decimal(38,0)")
-    words = F.size(F.split(F.trim(F.col("text")), r"\s+")) \
-        .cast("decimal(38,0)")
-    s = d.select("source", n.alias("n"), alpha.alias("n_alpha"),
-                 digit.alias("n_digit"), space.alias("n_space"),
-                 words.alias("n_words"))
-    return (s.groupBy("source")
-            .agg(F.sum("n").alias("sn"), F.sum("n_alpha").alias("sa"),
-                 F.sum("n_digit").alias("sd"), F.sum("n_space").alias("ss"),
-                 F.sum("n_words").alias("sw"))
-            .select("source", F.col("sn").cast("long").alias("n_chars"),
-                    F.expr("CAST(sa * 1000000 div sn AS BIGINT)")
-                    .alias("alpha_e6"),
-                    F.expr("CAST(sd * 1000000 div sn AS BIGINT)")
-                    .alias("digit_e6"),
-                    F.expr("CAST(ss * 1000000 div sn AS BIGINT)")
-                    .alias("space_e6"),
-                    F.expr("CAST((sn - ss) * 100 div sw AS BIGINT)")
-                    .alias("avg_word_len_e2"))
-            .orderBy("source"))
-
-
-_GINI_LORENZ_SQL = """
-WITH r AS (
-  SELECT c.c_mktsegment AS segment, o.o_custkey AS ck,
-         sum(CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100 AS HUGEINT))
-           AS cents
-  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-  GROUP BY 1, 2
-), rk AS (
-  SELECT segment, cents,
-         CAST(row_number() OVER (PARTITION BY segment
-                                 ORDER BY cents, ck) AS HUGEINT) AS i
-  FROM r
-)
-SELECT segment, CAST(count(*) AS BIGINT) AS n_customers,
-       CAST(sum(cents) AS BIGINT) AS total_cents,
-       CAST((2 * sum(i * cents) - (CAST(count(*) AS HUGEINT) + 1)
-             * sum(cents)) * 1000000
-            // (CAST(count(*) AS HUGEINT) * sum(cents)) AS BIGINT)
-         AS gini_e6
-FROM rk GROUP BY segment ORDER BY segment
-"""
-
-
-@register("q_revenue_gini_lorenz", _GINI_LORENZ_SQL)
-def q_revenue_gini_lorenz(spark, sf_dir):
-    """Income-style Gini coefficient of customer revenue per market
-    segment, via the exact rank formula G = (2·Σi·xᵢ − (n+1)·Σx)/(n·Σx)
-    over customers sorted ascending by spend (custkey tie-break makes
-    the rank total). Integer cents end-to-end, truncating e6 division —
-    the revenue-concentration complement of q_orders_hhi (HHI weights
-    the head; Gini measures the whole Lorenz curve). The rank window
-    partitions by segment, so each shuffle partition sorts one
-    segment's customers — no global sort."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    r = (o.join(c, o.o_custkey == c.c_custkey)
-         .groupBy(F.col("c_mktsegment").alias("segment"),
-                  F.col("o_custkey").alias("ck"))
-         .agg(F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100)
-                    .cast("decimal(38,0)")).alias("cents")))
-    w = Window.partitionBy("segment").orderBy("cents", "ck")
-    rk = r.select("segment", "cents",
-                  F.row_number().over(w).cast("decimal(38,0)").alias("i"))
-    return (rk.groupBy("segment")
-            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-                 F.sum("cents").alias("s"),
-                 F.sum(F.col("i") * F.col("cents")).alias("si"))
-            .select("segment", F.col("n").cast("long").alias("n_customers"),
-                    F.col("s").cast("long").alias("total_cents"),
-                    F.expr("CAST((2 * si - (n + 1) * s) * 1000000"
-                           " div (n * s) AS BIGINT)").alias("gini_e6"))
-            .orderBy("segment"))
-
-
-_DISCOUNT_BAND_SQL = """
-SELECT CAST(floor(l_discount * 100 + 0.5) AS BIGINT) AS disc_pct,
-       CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(sum(CAST(l_quantity AS HUGEINT)) * 100
-            // CAST(count(*) AS HUGEINT) AS BIGINT) AS avg_qty_e2,
-       CAST(sum(CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100
-                     AS HUGEINT))
-            // CAST(count(*) AS HUGEINT) AS BIGINT) AS avg_price_cents
-FROM lineitem GROUP BY 1 ORDER BY 1
-"""
-
-
-@register("q_lineitem_discount_band", _DISCOUNT_BAND_SQL)
-def q_lineitem_discount_band(spark, sf_dir):
-    """Quantity/price profile by discount percentage band — the
-    elasticity table a pricing analyst reads to see whether deeper
-    discounts move bigger quantities (in TPC-H they don't: discount is
-    independent of quantity, and the flat rows prove the generator's
-    independence). Band key is floor(d*100+0.5) so the float discount
-    lands on an exact integer in both engines; one combinable aggregate
-    over an 11-value domain — map-side partials collapse it before the
-    shuffle."""
-    li = _t(spark, sf_dir, "lineitem")
-    return (li.groupBy(F.floor(F.col("l_discount") * 100 + 0.5)
-                       .cast("long").alias("disc_pct"))
-            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-                 F.sum(F.col("l_quantity").cast("decimal(38,0)"))
-                 .alias("sq"),
-                 F.sum((F.col("l_extendedprice").cast("decimal(18,2)")
-                        * 100).cast("decimal(38,0)")).alias("sp"))
-            .select("disc_pct", F.col("n").cast("long").alias("n_lines"),
-                    F.expr("CAST(sq * 100 div n AS BIGINT)")
-                    .alias("avg_qty_e2"),
-                    F.expr("CAST(sp div n AS BIGINT)")
-                    .alias("avg_price_cents"))
-            .orderBy("disc_pct"))
-
-
-_PARETO_DECILES_SQL = """
-WITH u AS (
-  SELECT user_id, CAST(count(*) AS HUGEINT) AS n FROM events GROUP BY 1
-), d AS (
-  SELECT n, CAST(ntile(10) OVER (ORDER BY n DESC, user_id) AS BIGINT)
-              AS decile
-  FROM u
-), g AS (
-  SELECT decile, CAST(count(*) AS BIGINT) AS n_users, sum(n) AS ev
-  FROM d GROUP BY 1
-), t AS (SELECT sum(ev) AS tot FROM g)
-SELECT decile, n_users, CAST(ev AS BIGINT) AS n_events,
-       CAST(ev * 1000000 // (SELECT tot FROM t) AS BIGINT) AS share_e6,
-       CAST(sum(ev) OVER (ORDER BY decile
-                          ROWS UNBOUNDED PRECEDING) * 1000000
-            // (SELECT tot FROM t) AS BIGINT) AS cum_share_e6
-FROM g ORDER BY decile
-"""
-
-
-@register("q_events_pareto_deciles", _PARETO_DECILES_SQL)
-def q_events_pareto_deciles(spark, sf_dir):
-    """Pareto concentration of user activity: users ranked into deciles
-    by event count (busiest first, user_id tie-break), each decile's
-    share and cumulative share of all events (e6) — reads off the
-    '80/20' statement directly (cum_share at decile 2 ≈ how much the
-    top 20% of users generate). The only global window is the ntile
-    over per-user counts — one row per user, already reduced; the
-    decile cumsum runs over 10 rows."""
-    e = _t(spark, sf_dir, "events")
-    u = e.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"))
-    d = u.select("n", F.ntile(10).over(
-        Window.orderBy(F.desc("n"), F.asc("user_id")))
-        .cast("long").alias("decile"))
-    g = (d.groupBy("decile")
-         .agg(F.count(F.lit(1)).cast("long").alias("n_users"),
-              F.sum("n").alias("ev")))
-    t = g.agg(F.sum("ev").alias("tot"))
-    wc = Window.orderBy("decile").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    return (g.crossJoin(F.broadcast(t))
-            .withColumn("cumev", F.sum("ev").over(wc))
-            .select("decile", "n_users",
-                    F.col("ev").cast("long").alias("n_events"),
-                    F.expr("CAST(ev * 1000000 div tot AS BIGINT)")
-                    .alias("share_e6"),
-                    F.expr("CAST(cumev * 1000000 div tot AS BIGINT)")
-                    .alias("cum_share_e6"))
-            .orderBy("decile"))
-
-
-_VOCAB_COVERAGE_SQL = """
-WITH w AS (
-  SELECT unnest(list_filter(string_split_regex(trim(lower(text)), '\\s+'),
-                            x -> x != '')) AS word
-  FROM documents
-), f AS (
-  SELECT word, CAST(count(*) AS HUGEINT) AS c FROM w GROUP BY 1
-), t AS (
-  SELECT sum(c) AS tot, CAST(count(*) AS BIGINT) AS vocab FROM f
-), top AS (
-  SELECT word, c FROM f ORDER BY c DESC, word LIMIT 10000
-), r AS (
-  SELECT CAST(row_number() OVER (ORDER BY c DESC, word) AS BIGINT) AS rk,
-         sum(c) OVER (ORDER BY c DESC, word
-                      ROWS UNBOUNDED PRECEDING) AS cum
-  FROM top
-)
-SELECT rk AS vocab_rank, CAST(cum AS BIGINT) AS cum_tokens,
-       CAST(cum * 1000000 // (SELECT tot FROM t) AS BIGINT) AS coverage_e6,
-       (SELECT vocab FROM t) AS vocab_size
-FROM r WHERE rk IN (5, 10, 20, 100, 1000, 10000) ORDER BY rk
-"""
-
-
-@register("text_vocab_coverage", _VOCAB_COVERAGE_SQL)
-def text_vocab_coverage(spark, sf_dir):
-    """Vocabulary coverage curve: what fraction of all running tokens
-    the top-10/100/1k/10k most frequent words cover (e6), plus total
-    vocab size — the first statistic a tokenizer design reads (how big
-    must the vocab be before coverage flattens into the long tail).
-    Scale posture: the word-count aggregate is the only corpus-scale
-    pass; the top-10k cut is orderBy+limit, which Spark plans as
-    TakeOrderedAndProject (per-partition heaps + driver merge of 10k
-    rows, no global sort shuffle), and the rank/cumsum window then
-    runs over 10k rows on one partition by construction."""
-    d = _t(spark, sf_dir, "documents")
-    words = d.select(F.explode(F.filter(
-        F.split(F.trim(F.lower(F.col("text"))), r"\s+"),
-        lambda x: x != "")).alias("word"))
-    f = words.groupBy("word").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("c"))
-    t = f.agg(F.sum("c").alias("tot"),
-              F.count(F.lit(1)).cast("long").alias("vocab"))
-    top = f.orderBy(F.desc("c"), F.asc("word")).limit(10000)
-    w = Window.orderBy(F.desc("c"), F.asc("word"))
-    r = top.select(
-        F.row_number().over(w).cast("long").alias("rk"),
-        F.sum("c").over(w.rowsBetween(Window.unboundedPreceding,
-                                      Window.currentRow)).alias("cum"))
-    return (r.filter(F.col("rk").isin(5, 10, 20, 100, 1000, 10000))
-            .crossJoin(F.broadcast(t))
-            .select(F.col("rk").alias("vocab_rank"),
-                    F.col("cum").cast("long").alias("cum_tokens"),
-                    F.expr("CAST(cum * 1000000 div tot AS BIGINT)")
-                    .alias("coverage_e6"),
-                    F.col("vocab").alias("vocab_size"))
-            .orderBy("vocab_rank"))
-
-
-def _webp_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the WEBP container parse: dims/format/alpha/chunk list
-    are pure formulas (sources/multimodal.synthetic_webp_media),
-    recomputed here without touching the RIFF bytes."""
-    rows = []
-    for i in range(n):
-        w = 16 + (i * 13 + seed) % 1000
-        h = 16 + (i * 29 + seed) % 800
-        mode = i % 3
-        if mode == 0:
-            fmt, alpha = "lossless", bool(i % 2)
-            chunks = "VP8L"
-        elif mode == 1:
-            fmt, alpha, chunks = "lossy", False, "VP8 "
-        else:
-            fmt = "lossy"
-            alpha, exif = bool((i // 3) % 2), bool(i % 2)
-            # the encoder emits the VP8X extended layout only when a
-            # feature flag (alpha/EXIF) actually requires it
-            if alpha or exif:
-                parts = (["VP8X"] + (["ALPH"] if alpha else [])
-                         + (["EXIF"] if exif else []) + ["VP8 "])
-            else:
-                parts = ["VP8 "]
-            chunks = ",".join(parts)
-        rows.append(f"({i}, {w}, {h}, '{fmt}', {int(alpha)}, '{chunks}')")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height, format,"
-            f" CAST(has_alpha AS BOOLEAN) AS has_alpha, chunks"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, format, has_alpha, chunks)")
-
-
-@register("multimodal_webp_metadata", _webp_fixture_sql())
-def multimodal_webp_metadata(spark, sf_dir):
-    """REAL WEBP container metadata (sources/multimodal.parse_webp):
-    genuine RIFF chunk walks inside mapInPandas — canvas dims from VP8X /
-    VP8L packed header / VP8 keyframe start code, lossy-vs-lossless,
-    alpha flag, chunk inventory; VP8 entropy decode remains honestly
-    behind the codec stub, exactly like MP4 frames."""
-    from .sources.multimodal import (
-        extract_webp_metadata,
-        synthetic_webp_media,
-    )
-    return extract_webp_metadata(synthetic_webp_media(spark, 30))
 
 
 def _pdf_fixture_sql(n: int = 30, seed: int = 42) -> str:
@@ -11360,124 +6205,6 @@ def multimodal_pdf_pages(spark, sf_dir):
     return extract_pdf_pages(synthetic_pdf_text_media(spark, 12))
 
 
-_SEASONAL_ANOMALY_SQL = """
-WITH cell AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(date_part('hour', ts) AS INTEGER) AS hr,
-         count(*) AS c
-  FROM events GROUP BY 1, 2
-), g AS (
-  SELECT isodow(d) AS dw, hr, count(*) AS n, sum(c) AS s
-  FROM cell GROUP BY 1, 2
-)
-SELECT cell.d AS day, CAST(g.dw AS INTEGER) AS isodow, cell.hr AS hour,
-       CAST(cell.c AS BIGINT) AS n_events,
-       CAST(g.n AS BIGINT) AS n_cells, CAST(g.s AS BIGINT) AS cell_total,
-       CAST(abs(cell.c * g.n - g.s) * 1000000 // g.s AS BIGINT) AS dev_e6
-FROM cell JOIN g ON g.dw = isodow(cell.d) AND g.hr = cell.hr
-WHERE abs(cell.c * g.n - g.s) * 1000000 // g.s >= 100000
-"""
-
-
-@register("q_events_seasonal_anomaly", _SEASONAL_ANOMALY_SQL)
-def q_events_seasonal_anomaly(spark, sf_dir):
-    """Seasonally-adjusted volume anomalies: each (day, hour) cell is
-    compared against its HOUR-OF-WEEK baseline (same weekday × hour across
-    all weeks), not a global mean — the only baseline that doesn't flag
-    every Monday 9am as an anomaly. Deviation is exact-integer
-    cross-multiplication (|c·n − Σc|·1e6 div Σc — no float means), cells
-    ≥10% off baseline survive. Two hash aggregates, no window, no self-join
-    on raw events."""
-    e = (_t(spark, sf_dir, "events")
-         .select(F.to_date("ts").alias("d"),
-                 F.hour("ts").cast("int").alias("hr")))
-    cell = e.groupBy("d", "hr").agg(F.count(F.lit(1)).alias("c"))
-    cell = cell.withColumn("dw", (F.weekday("d") + 1).cast("int"))
-    g = cell.groupBy("dw", "hr").agg(F.count(F.lit(1)).alias("n"),
-                                     F.sum("c").alias("s"))
-    return (cell.join(g, ["dw", "hr"])
-            .withColumn("dev_e6",
-                        F.expr("abs(c * n - s) * 1000000 div s"))
-            .filter(F.col("dev_e6") >= 100000)
-            .select(F.col("d").alias("day"), F.col("dw").alias("isodow"),
-                    F.col("hr").alias("hour"),
-                    F.col("c").cast("long").alias("n_events"),
-                    F.col("n").cast("long").alias("n_cells"),
-                    F.col("s").cast("long").alias("cell_total"),
-                    F.col("dev_e6").cast("long").alias("dev_e6")))
-
-
-_BOOTSTRAP_B = 101
-
-_BOOTSTRAP_CI_SQL = f"""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, count(*) AS c FROM events GROUP BY 1
-), reps AS (
-  SELECT b, CAST(sum(w * c) * 1000000 //
-                 sum(w) AS BIGINT) AS mean_e6
-  FROM (
-    SELECT t.b, daily.c,
-           1 + CAST(CAST(concat('0x', substr(md5(concat('boot:',
-               CAST(t.b AS VARCHAR), ':', CAST(daily.d AS VARCHAR))), 1, 16))
-               AS UBIGINT) % 3 AS BIGINT) AS w
-    FROM daily, range(0, {_BOOTSTRAP_B}) t(b)
-  ) GROUP BY b
-), ranked AS (
-  SELECT mean_e6, row_number() OVER (ORDER BY mean_e6, b) AS rn FROM reps
-), pt AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_days,
-         CAST(sum(c) * 1000000 // count(*) AS BIGINT) AS mean_e6
-  FROM daily
-)
-SELECT pt.n_days, CAST({_BOOTSTRAP_B} AS INTEGER) AS n_reps, pt.mean_e6,
-       (SELECT mean_e6 FROM ranked
-        WHERE rn = CAST(ceil(0.05 * {_BOOTSTRAP_B}) AS BIGINT)) AS lo_e6,
-       (SELECT mean_e6 FROM ranked
-        WHERE rn = CAST(ceil(0.95 * {_BOOTSTRAP_B}) AS BIGINT)) AS hi_e6
-FROM pt
-"""
-
-
-@register("q_events_bootstrap_ci", _BOOTSTRAP_CI_SQL)
-def q_events_bootstrap_ci(spark, sf_dir):
-    """Deterministic reweighting-bootstrap CI for mean daily event volume:
-    B=101 replicates reweight each day by w = 1 + (md5('boot:b:day') mod 3)
-    ∈ {1,2,3} — reproducible across engines and retries (the same
-    md5-derived-randomness discipline as data_weighted_sample), replicate
-    means in exact e6 integers, the 5th/95th percentile picked by POSITION
-    (ceil(q·B), ties broken by replicate id) so both engines select the
-    identical replicate. Scale shape: the corpus-scale pass is one daily
-    aggregate; the replicate grid is |days|·B tiny rows."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.to_date("ts").alias("d"))
-             .agg(F.count(F.lit(1)).alias("c")))
-    reps_ids = spark.range(0, _BOOTSTRAP_B).select(F.col("id").alias("b"))
-    w = (F.lit(1) + F.conv(F.substring(F.md5(F.concat(
-        F.lit("boot:"), F.col("b").cast("string"), F.lit(":"),
-        F.col("d").cast("string"))), 1, 16), 16, 10)
-        .cast("decimal(38,0)") % 3).cast("long")
-    reps = (daily.crossJoin(F.broadcast(reps_ids))
-            .select("b", "c", w.alias("w"))
-            .groupBy("b")
-            .agg(F.expr("CAST(sum(w * c) * 1000000 div sum(w) AS BIGINT)")
-                 .alias("mean_e6")))
-    wr = Window.orderBy("mean_e6", "b")
-    ranked = reps.select("mean_e6", F.row_number().over(wr).alias("rn"))
-    import math
-    lo_rn = math.ceil(0.05 * _BOOTSTRAP_B)
-    hi_rn = math.ceil(0.95 * _BOOTSTRAP_B)
-    pt = daily.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.expr("CAST(sum(c) * 1000000 div count(*) AS BIGINT)")
-        .alias("mean_e6"))
-    lo = ranked.filter(F.col("rn") == lo_rn) \
-        .select(F.col("mean_e6").alias("lo_e6"))
-    hi = ranked.filter(F.col("rn") == hi_rn) \
-        .select(F.col("mean_e6").alias("hi_e6"))
-    return (pt.withColumn("n_reps", F.lit(_BOOTSTRAP_B).cast("int"))
-            .crossJoin(F.broadcast(lo)).crossJoin(F.broadcast(hi))
-            .select("n_days", "n_reps", "mean_e6", "lo_e6", "hi_e6"))
-
-
 def _bridges_sql(rounds: int = 6, top_k: int = 16) -> str:
     """Bridge-detection oracle: per-edge BFS unrolled — round i grows every
     probe's reachable set through the undirected edge list minus the probed
@@ -11585,260 +6312,6 @@ def kg_articulation_points_docs(spark, sf_dir):
     return articulation_points(e, src="term_a", dst="term_b", max_rounds=8)
 
 
-_SURVIVAL_SQL = """
-WITH e AS (
-  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events
-), g AS (
-  SELECT user_id, us,
-         CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us) IS NULL
-                   OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us)
-                      > 1800000000
-              THEN 1 ELSE 0 END AS brk
-  FROM e
-), s AS (
-  SELECT user_id, us,
-         sum(brk) OVER (PARTITION BY user_id ORDER BY us) AS sid
-  FROM g
-), sess AS (
-  SELECT user_id, sid, min(us) AS t0, max(us) AS t1 FROM s GROUP BY 1, 2
-), b AS (SELECT max(us) AS mx FROM e),
-dur AS (
-  SELECT (t1 - t0) // 60000000 AS t,
-         (t1 > (SELECT mx FROM b) - 1800000000) AS censored
-  FROM sess
-), ev AS (
-  SELECT t, CAST(count(*) FILTER (WHERE NOT censored) AS BIGINT) AS d_t,
-         CAST(count(*) AS BIGINT) AS all_t
-  FROM dur GROUP BY t
-), risk AS (
-  SELECT t, d_t, CAST(sum(all_t) OVER (ORDER BY t DESC) AS BIGINT) AS n_t
-  FROM ev
-), km AS (
-  SELECT t, d_t, n_t,
-         sum(CASE WHEN d_t >= n_t THEN 1 ELSE 0 END)
-             OVER (ORDER BY t) AS dead_all,
-         sum(ln(1.0 - CAST(least(d_t, n_t - 1) AS DOUBLE) / n_t))
-             OVER (ORDER BY t) AS lsum
-  FROM risk
-)
-SELECT CAST(t AS BIGINT) AS minute, d_t AS deaths, n_t AS at_risk,
-       round(CASE WHEN dead_all > 0 THEN 0.0 ELSE exp(lsum) END, 6)
-           AS survival
-FROM km
-"""
-
-
-@register("q_events_survival", _SURVIVAL_SQL)
-def q_events_survival(spark, sf_dir):
-    """Kaplan-Meier survival curve over session durations (30-min-gap
-    sessionization; sessions still open within 30 min of corpus end are
-    right-censored — they inform the at-risk counts but never count as
-    deaths). S(t) = Π_{u≤t} (1 − d_u/n_u), computed as exp of a running
-    sum of logs; a duration where every at-risk session dies zeroes the
-    curve from there on (the CASE guard, not ln(0)). Scale shape: the
-    sessionize window shuffles once on user_id, then everything collapses
-    to ≤max-duration distinct-minute rows before the unpartitioned
-    cumulative windows — O(1) state at any corpus size."""
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("us"))
-    w = Window.partitionBy("user_id").orderBy("us")
-    gap = F.col("us") - F.lag("us").over(w)
-    s = (e.withColumn("brk", F.when(F.lag("us").over(w).isNull()
-                                    | (gap > 1_800_000_000), 1).otherwise(0))
-         .withColumn("sid", F.sum("brk").over(w)))
-    sess = (s.groupBy("user_id", "sid")
-            .agg(F.min("us").alias("t0"), F.max("us").alias("t1")))
-    b = e.agg(F.max("us").alias("mx"))
-    dur = (sess.crossJoin(F.broadcast(b))
-           .select(F.expr("(t1 - t0) div 60000000").alias("t"),
-                   (F.col("t1") > F.col("mx") - 1_800_000_000)
-                   .alias("censored")))
-    ev = dur.groupBy("t").agg(
-        F.sum(F.when(~F.col("censored"), 1).otherwise(0))
-        .cast("long").alias("d_t"),
-        F.count(F.lit(1)).cast("long").alias("all_t"))
-    risk = ev.select(
-        "t", "d_t",
-        F.sum("all_t").over(Window.orderBy(F.col("t").desc()))
-        .cast("long").alias("n_t"))
-    wa = Window.orderBy("t")
-    km = risk.select(
-        "t", "d_t", "n_t",
-        F.sum(F.when(F.col("d_t") >= F.col("n_t"), 1).otherwise(0))
-        .over(wa).alias("dead_all"),
-        F.sum(F.log(F.lit(1.0)
-                    - F.least(F.col("d_t"), F.col("n_t") - 1)
-                    .cast("double") / F.col("n_t"))).over(wa).alias("lsum"))
-    return km.select(
-        F.col("t").cast("long").alias("minute"),
-        F.col("d_t").alias("deaths"), F.col("n_t").alias("at_risk"),
-        F.round(F.when(F.col("dead_all") > 0, F.lit(0.0))
-                .otherwise(F.exp("lsum")), 6).alias("survival"))
-
-
-_COHORT_LTV_SQL = """
-WITH f AS (
-  SELECT o_custkey, min(o_orderdate) AS fd FROM orders GROUP BY o_custkey
-), c AS (
-  SELECT o_custkey, CAST(date_trunc('month', fd) AS DATE) AS cm FROM f
-), sz AS (SELECT cm, count(*) AS n FROM c GROUP BY cm),
-r AS (
-  SELECT c.cm,
-         (year(o.o_orderdate) * 12 + month(o.o_orderdate))
-       - (year(c.cm) * 12 + month(c.cm)) AS k,
-         sum(CAST(CAST(o.o_totalprice AS DECIMAL(18,2)) * 100
-                  AS BIGINT)) AS rev_cents
-  FROM orders o JOIN c ON o.o_custkey = c.o_custkey
-  GROUP BY 1, 2
-)
-SELECT r.cm AS cohort_month, CAST(r.k AS BIGINT) AS month_n,
-       CAST(sz.n AS BIGINT) AS cohort_size,
-       CAST(sum(r.rev_cents) OVER (PARTITION BY r.cm ORDER BY r.k)
-            // sz.n AS BIGINT) AS cum_ltv_cents_per_user
-FROM r JOIN sz ON sz.cm = r.cm
-"""
-
-
-@register("q_orders_cohort_ltv", _COHORT_LTV_SQL)
-def q_orders_cohort_ltv(spark, sf_dir):
-    """Cumulative lifetime value per first-order-month cohort: for each
-    cohort × months-since-acquisition, running revenue per cohort member —
-    the revenue-weighted companion to q_events_cohort_retention. Money in
-    exact integer cents end to end (decimal cast → ×100 → long sums →
-    integer division), so the running sum is order-free and cross-engine
-    bit-identical; month arithmetic as exact integer year·12+month
-    differences; the cumulative window runs over the tiny cohort×month
-    grid, never the order rows."""
-    o = _t(spark, sf_dir, "orders")
-    f = o.groupBy("o_custkey").agg(F.min("o_orderdate").alias("fd"))
-    c = f.select("o_custkey", F.trunc("fd", "month").alias("cm"))
-    sz = c.groupBy("cm").agg(F.count(F.lit(1)).alias("n"))
-    k = ((F.year("o_orderdate") * 12 + F.month("o_orderdate"))
-         - (F.year("cm") * 12 + F.month("cm")))
-    r = (o.join(c, "o_custkey")
-         .groupBy("cm", k.alias("k"))
-         .agg(F.sum((F.col("o_totalprice").cast("decimal(18,2)") * 100)
-                    .cast("long")).alias("rev_cents")))
-    w = Window.partitionBy("cm").orderBy("k")
-    return (r.join(sz, "cm")
-            .select(F.col("cm").alias("cohort_month"),
-                    F.col("k").cast("long").alias("month_n"),
-                    F.col("n").cast("long").alias("cohort_size"),
-                    F.expr("CAST(sum(rev_cents) OVER "
-                           "(PARTITION BY cm ORDER BY k) div n AS BIGINT)")
-                    .alias("cum_ltv_cents_per_user")))
-
-
-def _twoecc_sql(bfs_rounds: int = 6, cc_rounds: int = 10,
-                top_k: int = 16) -> str:
-    """2-edge-connected-components oracle: the bridge BFS (see
-    _bridges_sql) finds the cut edges, min-label propagation over the
-    remaining edges finds their components, and bridge-only nodes fall
-    back to singleton labels via coalesce."""
-    head = f"""
-WITH m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), p AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b, count(*) AS c
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-), te AS MATERIALIZED (
-  SELECT a, b FROM p ORDER BY c DESC, a, b LIMIT {top_k}
-), und AS MATERIALIZED (
-  SELECT a AS s, b AS d FROM te UNION ALL SELECT b, a FROM te
-), r0 AS (SELECT a, b, a AS node FROM te)"""
-    steps = []
-    for i in range(1, bfs_rounds + 1):
-        steps.append(f""",
-r{i} AS MATERIALIZED (
-  SELECT DISTINCT a, b, node FROM (
-    SELECT a, b, node FROM r{i - 1}
-    UNION ALL
-    SELECT r.a, r.b, u.d AS node
-    FROM r{i - 1} r JOIN und u ON u.s = r.node
-    WHERE NOT (least(u.s, u.d) = r.a AND greatest(u.s, u.d) = r.b)
-  ))""")
-    mid = f""",
-ke AS MATERIALIZED (
-  SELECT t.a, t.b
-  FROM te t LEFT JOIN (SELECT a, b FROM r{bfs_rounds} WHERE node = b) h
-    ON h.a = t.a AND h.b = t.b
-  WHERE h.a IS NOT NULL
-), bd AS MATERIALIZED (
-  SELECT a AS node, b AS nbr FROM ke UNION SELECT b, a FROM ke
-), cnodes AS MATERIALIZED (SELECT DISTINCT node FROM bd),
-l0 AS (SELECT node, node AS lbl FROM cnodes)"""
-    for i in range(1, cc_rounds + 1):
-        p = f"l{i - 1}"
-        mid += f""",
-l{i} AS MATERIALIZED (
-  SELECT nd.node, least(s.lbl, coalesce(nb.mn, s.lbl)) AS lbl
-  FROM cnodes nd
-  JOIN {p} s ON s.node = nd.node
-  LEFT JOIN (SELECT bd.node, min(pv.lbl) AS mn
-             FROM bd JOIN {p} pv ON pv.node = bd.nbr
-             GROUP BY bd.node) nb ON nb.node = nd.node
-)"""
-    return head + "".join(steps) + mid + f"""
-SELECT an.node AS term, coalesce(l.lbl, an.node) AS comp2
-FROM (SELECT DISTINCT s AS node FROM und) an
-LEFT JOIN l{cc_rounds} l ON l.node = an.node"""
-
-
-@register("kg_2ecc_docs", _twoecc_sql())
-def kg_2ecc_docs(spark, sf_dir):
-    """2-edge-connected components over the 16 strongest co-occurrence
-    edges: remove the bridges (operators/graph_algos.bridges), then run
-    the REAL distributed large-star/small-star CC operator
-    (canonicalize.connected_components, driver path disabled) on what
-    remains; nodes whose every edge was a bridge become singleton
-    components. The robustness partition of the KG — node pairs inside a
-    component stay connected after any single edge failure."""
-    from .operators.canonicalize import connected_components
-    from .operators.graph_algos import bridges
-    e = (_cooc_edges(spark, sf_dir, 1)
-         .orderBy(F.col("common").desc(), "term_a", "term_b").limit(16)
-         .select("term_a", "term_b"))
-    br = bridges(e, src="term_a", dst="term_b", max_rounds=8)
-    kept = (br.filter(~F.col("is_bridge"))
-            .select(F.col("term_a").alias("src"),
-                    F.col("term_b").alias("dst")))
-    cc = connected_components(kept, driver_threshold=0) \
-        .withColumnRenamed("norm_term", "term")
-    nodes = (e.select(F.col("term_a").alias("term"))
-             .unionByName(e.select(F.col("term_b").alias("term")))
-             .distinct())
-    return (nodes.join(cc, "term", "left")
-            .select("term", F.coalesce("canon", "term").alias("comp2")))
-
-
-_WSAMPLE_SQL = """
-WITH h AS (
-  SELECT doc_id, n_chars,
-         (CAST(concat('0x', substr(md5(concat('wsample:42:',
-              CAST(doc_id AS VARCHAR))), 1, 13)) AS UBIGINT) + 0.5)
-         / 4503599627370496.0 AS u
-  FROM documents WHERE n_chars > 0
-)
-SELECT doc_id, n_chars, round(ln(u) / n_chars, 6) AS es_key
-FROM h ORDER BY ln(u) / n_chars DESC, doc_id LIMIT 200
-"""
-
-
-@register("data_weighted_sample", _WSAMPLE_SQL)
-def data_weighted_sample(spark, sf_dir):
-    """Weighted sampling without replacement, 200 docs with probability ∝
-    n_chars (Efraimidis-Spirakis keys; operators/text_analysis.
-    weighted_sample). The md5-seeded uniform makes the draw exact and
-    engine-portable — the top-k selection is bit-identical in Spark and
-    the SQL oracle, retry- and partitioning-proof at 100 TB."""
-    from .operators.text_analysis import weighted_sample
-    return weighted_sample(_t(spark, sf_dir, "documents"), k=200,
-                           weight_col="n_chars", key_col="doc_id", seed=42)
-
-
 _CONTAINMENT_SQL = """
 WITH sh AS (
   SELECT doc_id AS id, lang AS blk,
@@ -11868,561 +6341,6 @@ def dedup_containment_docs(spark, sf_dir):
     from .operators.dedup import containment_pairs
     return containment_pairs(_t(spark, sf_dir, "documents"),
                              threshold=0.3, k=3)
-
-
-_ENTROPY_RATE_SQL = """
-WITH s AS (
-  SELECT event_type AS src,
-         lead(event_type, 1) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM events
-), c AS (
-  SELECT src, dst, count(*) AS n
-  FROM s WHERE dst IS NOT NULL GROUP BY src, dst
-), t AS (SELECT src, sum(n) AS ns FROM c GROUP BY src),
-g AS (SELECT sum(ns) AS ng FROM t),
-h AS (
-  SELECT c.src, CAST(t.ns AS BIGINT) AS n_out,
-         CAST(count(*) AS BIGINT) AS out_degree,
-         -sum((CAST(c.n AS DOUBLE) / t.ns)
-              * ln(CAST(c.n AS DOUBLE) / t.ns)) AS ent
-  FROM c JOIN t ON t.src = c.src GROUP BY c.src, t.ns
-)
-SELECT src, n_out, out_degree, round(ent, 6) AS entropy_nats,
-       CAST(n_out * 1000000 // (SELECT ng FROM g) AS BIGINT) AS pi_e6,
-       round(ent * n_out / (SELECT ng FROM g), 6) AS rate_contrib_nats
-FROM h
-"""
-
-
-@register("q_events_entropy_rate", _ENTROPY_RATE_SQL)
-def q_events_entropy_rate(spark, sf_dir):
-    """Markov entropy rate of the event-type process: per source state,
-    the conditional next-step entropy H(dst|src) = −Σ p ln p over the
-    per-user transition stream, weighted by the empirical state
-    distribution π (its Σ is the chain's entropy rate — how predictable
-    user behavior is). Transition counts are exact integers; only the
-    final ≤|types|-term log sum is float (round-6, same discipline as
-    the LM-scoring queries)."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = (e.select(F.col("event_type").alias("src"),
-                  F.lead("event_type", 1).over(w).alias("dst"))
-         .filter(F.col("dst").isNotNull()))
-    c = s.groupBy("src", "dst").agg(F.count(F.lit(1)).alias("n"))
-    t = c.groupBy("src").agg(F.sum("n").alias("ns"))
-    p = F.col("n").cast("double") / F.col("ns")
-    h = (c.join(t, "src")
-         .groupBy("src", "ns")
-         .agg(F.count(F.lit(1)).cast("long").alias("out_degree"),
-              (-F.sum(p * F.log(p))).alias("ent")))
-    g = t.agg(F.sum("ns").alias("ng"))
-    return (h.crossJoin(F.broadcast(g))
-            .select("src", F.col("ns").cast("long").alias("n_out"),
-                    "out_degree", F.round("ent", 6).alias("entropy_nats"),
-                    F.expr("CAST(ns * 1000000 div ng AS BIGINT)")
-                    .alias("pi_e6"),
-                    F.round(F.col("ent") * F.col("ns") / F.col("ng"), 6)
-                    .alias("rate_contrib_nats")))
-
-
-_BURSTINESS_SQL = """
-WITH w AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS tok FROM documents
-), cnt AS (
-  SELECT doc_id, tok, count(*) AS c FROM w WHERE tok <> '' GROUP BY 1, 2
-), d AS (SELECT count(*) AS nd FROM documents),
-top AS (
-  SELECT tok, count(*) AS df,
-         CAST(sum(c) AS HUGEINT) AS s1, CAST(sum(c * c) AS HUGEINT) AS s2
-  FROM cnt GROUP BY tok ORDER BY count(*) DESC, tok LIMIT 20
-)
-SELECT tok AS term, CAST(df AS BIGINT) AS df,
-       CAST(s1 AS BIGINT) AS total_count,
-       CAST(((SELECT nd FROM d) * s2 - s1 * s1) * 1000000
-            // ((SELECT nd FROM d) * s1) AS BIGINT) AS vmr_e6
-FROM top
-"""
-
-
-@register("text_term_burstiness", _BURSTINESS_SQL)
-def text_term_burstiness(spark, sf_dir):
-    """Term burstiness (variance-to-mean ratio of per-doc counts, zeros
-    included) for the 20 highest-df terms — VMR ≈ 1 is Poisson scatter,
-    ≫ 1 is clumping (boilerplate, topical bursts): a corpus-quality lens
-    Zipf/df profiles miss. Exact end to end: population VMR =
-    (D·S2 − S1²)/(D·S1) in decimal(38,0)/HUGEINT cross-multiplication,
-    e6 fixed point, no floats anywhere."""
-    docs = _t(spark, sf_dir, "documents")
-    cnt = (docs.select("doc_id",
-                       F.explode(F.split("text", " ")).alias("tok"))
-           .filter(F.col("tok") != "")
-           .groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c")))
-    top = (cnt.groupBy("tok")
-           .agg(F.count(F.lit(1)).alias("df"),
-                F.sum(F.col("c").cast("decimal(38,0)")).alias("s1"),
-                F.sum((F.col("c") * F.col("c")).cast("decimal(38,0)"))
-                .alias("s2"))
-           .orderBy(F.col("df").desc(), "tok").limit(20))
-    d = docs.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("nd"))
-    return (top.crossJoin(F.broadcast(d))
-            .select(F.col("tok").alias("term"),
-                    F.col("df").cast("long").alias("df"),
-                    F.col("s1").cast("long").alias("total_count"),
-                    F.expr("CAST((nd * s2 - s1 * s1) * 1000000"
-                           " div (nd * s1) AS BIGINT)").alias("vmr_e6")))
-
-
-_GRAPH_CHURN_SQL = """
-WITH e AS (
-  SELECT DISTINCT CAST(date_trunc('week', CAST(ts AS DATE)) AS DATE) AS wk,
-         user_id, event_type
-  FROM events
-), cnt AS (SELECT wk, count(*) AS n FROM e GROUP BY wk),
-inter AS (
-  SELECT a.wk AS wk, count(*) AS common
-  FROM e a JOIN e b ON b.user_id = a.user_id
-    AND b.event_type = a.event_type AND b.wk = a.wk - 7
-  GROUP BY a.wk
-)
-SELECT c.wk AS week, CAST(coalesce(i.common, 0) AS BIGINT) AS common,
-       CAST(c.n AS BIGINT) AS n_cur,
-       CAST(coalesce(p.n, 0) AS BIGINT) AS n_prev,
-       CAST(c.n - coalesce(i.common, 0) AS BIGINT) AS added,
-       CAST(coalesce(p.n, 0) - coalesce(i.common, 0) AS BIGINT) AS removed,
-       CAST(coalesce(i.common, 0) * 1000000
-            // (c.n + coalesce(p.n, 0) - coalesce(i.common, 0)) AS BIGINT)
-           AS jaccard_e6
-FROM cnt c LEFT JOIN cnt p ON p.wk = c.wk - 7
-LEFT JOIN inter i ON i.wk = c.wk
-"""
-
-
-@register("q_events_graph_churn", _GRAPH_CHURN_SQL)
-def q_events_graph_churn(spark, sf_dir):
-    """Temporal-graph edge churn: the weekly (user, event_type) bipartite
-    interaction graph compared to its previous snapshot — surviving /
-    added / removed edges and the week-over-week edge-set Jaccard (e6
-    fixed point, exact integers) — the KG-maintenance stability lens
-    ('how much of the graph is new each week'). One distinct + one
-    self-equi-join on (entity pair, shifted week); no windows, no
-    snapshot materialization."""
-    e = (_t(spark, sf_dir, "events")
-         .select(F.date_trunc("week", F.col("ts").cast("date"))
-                 .cast("date").alias("wk"), "user_id", "event_type")
-         .distinct())
-    cnt = e.groupBy("wk").agg(F.count(F.lit(1)).alias("n"))
-    nxt = e.select(F.date_add("wk", 7).alias("wk"), "user_id", "event_type")
-    inter = (e.join(nxt, ["wk", "user_id", "event_type"])
-             .groupBy("wk").agg(F.count(F.lit(1)).alias("common")))
-    p = cnt.select(F.date_add("wk", 7).alias("wk"), F.col("n").alias("np"))
-    common = F.coalesce("common", F.lit(0)).cast("long")
-    nprev = F.coalesce("np", F.lit(0)).cast("long")
-    return (cnt.join(p, "wk", "left").join(inter, "wk", "left")
-            .select(F.col("wk").alias("week"), common.alias("common"),
-                    F.col("n").cast("long").alias("n_cur"),
-                    nprev.alias("n_prev"),
-                    (F.col("n") - common).cast("long").alias("added"),
-                    (nprev - common).alias("removed"),
-                    F.expr("CAST(coalesce(common, 0) * 1000000 div"
-                           " (n + coalesce(np, 0) - coalesce(common, 0))"
-                           " AS BIGINT)").alias("jaccard_e6")))
-
-
-# ──────────────── statistical inference suite (exact-integer) ────────────────
-# Classical hypothesis-test statistics a data-quality / experimentation
-# pipeline computes over event streams, each re-derived as exact integer
-# arithmetic (cross-multiplied deviations, doubled average ranks, scaled
-# ECDF gaps) so Spark and DuckDB agree bit-for-bit with no float sums.
-
-_CHI_SQUARE_SQL = """
-WITH o AS (
-  SELECT event_type, isodow(CAST(ts AS DATE)) AS dw,
-         CAST(count(*) AS HUGEINT) AS o
-  FROM events GROUP BY 1, 2
-), cells AS (
-  SELECT t.event_type, d.dw, coalesce(o.o, 0) AS o
-  FROM (SELECT DISTINCT event_type FROM o) t
-  CROSS JOIN (SELECT DISTINCT dw FROM o) d
-  LEFT JOIN o ON o.event_type = t.event_type AND o.dw = d.dw
-), rt AS (SELECT event_type, sum(o) AS r FROM cells GROUP BY 1),
-ct AS (SELECT dw, sum(o) AS c FROM cells GROUP BY 1),
-n AS (SELECT sum(o) AS n FROM cells),
-chi AS (
-  SELECT sum((cells.o * n.n - rt.r * ct.c) * (cells.o * n.n - rt.r * ct.c)
-             * 1000000 // (rt.r * ct.c * n.n)) AS chi2_e6,
-         max(n.n) AS n,
-         count(DISTINCT cells.event_type) AS nr,
-         count(DISTINCT cells.dw) AS nc
-  FROM cells JOIN rt USING (event_type) JOIN ct USING (dw) CROSS JOIN n
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(nr AS INTEGER) AS n_rows,
-       CAST(nc AS INTEGER) AS n_cols,
-       CAST((nr - 1) * (nc - 1) AS INTEGER) AS dof,
-       CAST(chi2_e6 AS BIGINT) AS chi2_e6,
-       CAST(chi2_e6 // (n * least(nr - 1, nc - 1)) AS BIGINT)
-           AS cramers_v2_e6
-FROM chi
-"""
-
-
-@register("q_events_chi_square", _CHI_SQUARE_SQL)
-def q_events_chi_square(spark, sf_dir):
-    """Chi-square test of independence (event_type × ISO weekday) with
-    Cramér's V² effect size, in exact integer arithmetic: each cell's
-    (O·N − r·c)²·10⁶ div (r·c·N) — the χ² term cross-multiplied so no
-    float expected-count E=rc/N ever forms — summed over the FULL
-    cross-product of observed categories (zero cells included via a
-    dims-cross-join + left join, so sparse contingency tables are not
-    silently under-counted). V²_e6 = χ²_e6 div (N·min(r−1,c−1)). Exact
-    while (O·N)²·10⁶ < 10³⁸, i.e. N ≲ 10⁸ rows per table — beyond that,
-    pre-aggregate to cells (this query's first groupBy already reduces
-    the input to |types|×7 rows, so the scan dominates at any scale)."""
-    e = _t(spark, sf_dir, "events")
-    o = (e.groupBy("event_type",
-                   (F.weekday(F.col("ts").cast("date")) + 1).alias("dw"))
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("o")))
-    types = o.select("event_type").distinct()
-    dws = o.select("dw").distinct()
-    cells = (types.crossJoin(dws).join(o, ["event_type", "dw"], "left")
-             .withColumn("o", F.coalesce("o", F.lit(0).cast("decimal(38,0)"))))
-    rt = cells.groupBy("event_type").agg(F.sum("o").alias("r"))
-    ct = cells.groupBy("dw").agg(F.sum("o").alias("c"))
-    n = cells.agg(F.sum("o").alias("n"))
-    chi = (cells.join(F.broadcast(rt), "event_type")
-           .join(F.broadcast(ct), "dw").crossJoin(F.broadcast(n))
-           .agg(F.sum(F.expr("(o * n - r * c) * (o * n - r * c)"
-                             " * 1000000 div (r * c * n)")).alias("chi2_e6"),
-                F.max("n").alias("n"),
-                F.countDistinct("event_type").alias("nr"),
-                F.countDistinct("dw").alias("nc")))
-    return chi.select(
-        F.col("n").cast("long").alias("n"),
-        F.col("nr").cast("int").alias("n_rows"),
-        F.col("nc").cast("int").alias("n_cols"),
-        ((F.col("nr") - 1) * (F.col("nc") - 1)).cast("int").alias("dof"),
-        F.col("chi2_e6").cast("long").alias("chi2_e6"),
-        F.expr("CAST(chi2_e6 div (n * least(nr - 1, nc - 1)) AS BIGINT)")
-        .alias("cramers_v2_e6"))
-
-
-_MANN_WHITNEY_SQL = """
-WITH s AS (
-  SELECT CAST(floor("value" * 100 + 0.5) AS HUGEINT) AS y,
-         CAST(count(*) AS HUGEINT) AS t,
-         CAST(count(*) FILTER (WHERE event_type = 'click') AS HUGEINT) AS c1
-  FROM events WHERE event_type IN ('click', 'view')
-  GROUP BY 1
-), w AS (
-  SELECT y, t, c1,
-         coalesce(sum(t) OVER (ORDER BY y
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS l
-  FROM s
-), agg AS (
-  SELECT sum(c1) AS n1, sum(t - c1) AS n2,
-         sum(c1 * (2 * l + t + 1)) AS r1_x2
-  FROM w
-)
-SELECT CAST(n1 AS BIGINT) AS n1, CAST(n2 AS BIGINT) AS n2,
-       CAST(r1_x2 AS BIGINT) AS r1_x2,
-       CAST(r1_x2 - n1 * (n1 + 1) AS BIGINT) AS u1_x2,
-       CAST((r1_x2 - n1 * (n1 + 1)) * 1000000 // (2 * n1 * n2) AS BIGINT)
-           AS auc_e6
-FROM agg
-"""
-
-
-@register("q_events_mann_whitney", _MANN_WHITNEY_SQL)
-def q_events_mann_whitney(spark, sf_dir):
-    """Mann-Whitney U (rank-sum) test statistic for click-vs-view values,
-    tie-corrected, in exact integers: ranks are kept DOUBLED so midranks
-    of tied groups stay integral — a value preceded by L items with T ties
-    has 2·avgrank = 2L+T+1 — then U₁×2 = ΣR₁×2 − n₁(n₁+1) and the
-    effect size AUC = U₁/(n₁n₂) as e6 fixed point. The plan aggregates to
-    distinct values FIRST (one groupBy), then a single ordered cumsum
-    window over |distinct values| rows — never a rank over raw rows, so
-    the window input is bounded by value cardinality, not data size."""
-    e = (_t(spark, sf_dir, "events")
-         .filter(F.col("event_type").isin("click", "view")))
-    s = (e.groupBy(F.floor(F.col("value") * 100 + F.lit(0.5))
-                   .cast("decimal(38,0)").alias("y"))
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("t"),
-              F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-              .cast("decimal(38,0)").alias("c1")))
-    w = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = s.withColumn(
-        "l", F.coalesce(F.sum("t").over(w), F.lit(0).cast("decimal(38,0)")))
-    agg = ranked.agg(
-        F.sum("c1").alias("n1"), F.sum(F.col("t") - F.col("c1")).alias("n2"),
-        F.sum(F.col("c1") * (F.lit(2) * F.col("l") + F.col("t") + 1))
-        .alias("r1_x2"))
-    return agg.select(
-        F.col("n1").cast("long").alias("n1"),
-        F.col("n2").cast("long").alias("n2"),
-        F.col("r1_x2").cast("long").alias("r1_x2"),
-        F.expr("CAST(r1_x2 - n1 * (n1 + 1) AS BIGINT)").alias("u1_x2"),
-        F.expr("CAST((r1_x2 - n1 * (n1 + 1)) * 1000000"
-               " div (2 * n1 * n2) AS BIGINT)").alias("auc_e6"))
-
-
-_KS_TEST_SQL = """
-WITH s AS (
-  SELECT CAST(floor("value" * 100 + 0.5) AS HUGEINT) AS y,
-         CAST(count(*) FILTER (WHERE event_type = 'purchase') AS HUGEINT) AS c1,
-         CAST(count(*) FILTER (WHERE event_type = 'signup') AS HUGEINT) AS c2
-  FROM events WHERE event_type IN ('purchase', 'signup')
-  GROUP BY 1
-), cum AS (
-  SELECT sum(c1) OVER (ORDER BY y) AS cum1,
-         sum(c2) OVER (ORDER BY y) AS cum2,
-         sum(c1) OVER () AS n1, sum(c2) OVER () AS n2
-  FROM s
-)
-SELECT CAST(max(n1) AS BIGINT) AS n1, CAST(max(n2) AS BIGINT) AS n2,
-       CAST(max(abs(cum1 * n2 - cum2 * n1)) AS BIGINT) AS d_num,
-       CAST(max(abs(cum1 * n2 - cum2 * n1)) * 1000000
-            // (max(n1) * max(n2)) AS BIGINT) AS d_e6
-FROM cum
-"""
-
-
-@register("q_events_ks_test", _KS_TEST_SQL)
-def q_events_ks_test(spark, sf_dir):
-    """Two-sample Kolmogorov-Smirnov statistic (purchase vs signup value
-    distributions) as an exact rational: D = max|F₁−F₂| evaluated only at
-    the distinct pooled values, with the gap kept as the integer
-    |cum₁·n₂ − cum₂·n₁| (numerator over the common denominator n₁n₂) and
-    reported alongside its e6 fixed-point quotient. Like the U test, the
-    plan reduces to distinct values before the single ordered cumsum
-    window, so window size is value cardinality, not row count."""
-    e = (_t(spark, sf_dir, "events")
-         .filter(F.col("event_type").isin("purchase", "signup")))
-    s = (e.groupBy(F.floor(F.col("value") * 100 + F.lit(0.5))
-                   .cast("decimal(38,0)").alias("y"))
-         .agg(F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-              .cast("decimal(38,0)").alias("c1"),
-              F.sum(F.when(F.col("event_type") == "signup", 1).otherwise(0))
-              .cast("decimal(38,0)").alias("c2")))
-    wc = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, 0)
-    wall = Window.rowsBetween(Window.unboundedPreceding,
-                              Window.unboundedFollowing)
-    cum = s.select(F.sum("c1").over(wc).alias("cum1"),
-                   F.sum("c2").over(wc).alias("cum2"),
-                   F.sum("c1").over(wall).alias("n1"),
-                   F.sum("c2").over(wall).alias("n2"))
-    return cum.agg(
-        F.max("n1").cast("long").alias("n1"),
-        F.max("n2").cast("long").alias("n2"),
-        F.max(F.abs(F.col("cum1") * F.col("n2") - F.col("cum2") * F.col("n1")))
-        .cast("long").alias("d_num"),
-        F.expr("CAST(max(abs(cum1 * n2 - cum2 * n1)) * 1000000"
-               " div (max(n1) * max(n2)) AS BIGINT)").alias("d_e6"))
-
-
-_SPEARMAN_SQL = """
-WITH u AS (
-  SELECT user_id, CAST(count(*) AS HUGEINT) AS x,
-         CAST(sum(CAST(floor("value" * 100 + 0.5) AS HUGEINT)) AS HUGEINT) AS y
-  FROM events GROUP BY 1
-), r AS (
-  SELECT CAST(2 * (rank() OVER (ORDER BY x) - 1)
-              + count(*) OVER (PARTITION BY x) + 1 AS HUGEINT) AS rx2,
-         CAST(2 * (rank() OVER (ORDER BY y) - 1)
-              + count(*) OVER (PARTITION BY y) + 1 AS HUGEINT) AS ry2
-  FROM u
-), s AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(rx2) AS sx, sum(ry2) AS sy,
-         sum(rx2 * ry2) AS sxy, sum(rx2 * rx2) AS sxx, sum(ry2 * ry2) AS syy
-  FROM r
-), t AS (
-  SELECT n, n * sxy - sx * sy AS num,
-         n * sxx - sx * sx AS vx, n * syy - sy * sy AS vy
-  FROM s
-)
-SELECT CAST(n AS BIGINT) AS n, CAST(num AS BIGINT) AS num,
-       CAST(vx AS BIGINT) AS vx, CAST(vy AS BIGINT) AS vy,
-       CAST(CASE WHEN num < 0 THEN -1 WHEN num > 0 THEN 1 ELSE 0 END
-            AS INTEGER) AS rho_sign,
-       CAST(((num * 1000000000 // vx) * (num * 1000000000 // vy))
-            // 1000000000000 AS BIGINT) AS rho2_e6
-FROM t
-"""
-
-
-@register("q_events_spearman", _SPEARMAN_SQL)
-def q_events_spearman(spark, sf_dir):
-    """Spearman rank correlation between per-user activity (event count)
-    and per-user spend (exact cents), tie-corrected via doubled average
-    ranks (2·avgrank = 2(rank−1) + |ties| + 1, always integral), then
-    Pearson on the integer ranks with five exact sums. ρ² is emitted as
-    a divide-first e6 fixed point — (num·10⁹ div vx)·(num·10⁹ div vy)
-    div 10¹² — so no intermediate ever squares `num` (that would cap n
-    at ~30k; divide-first keeps every term < 10³⁸ up to n ≈ 10⁷ ranked
-    units) — plus the exact integers (num, vx, vy) and the sign, from
-    which any consumer can recompute ρ at full precision. Ranks need a
-    total-order window over USERS (one per rank axis) — the per-user
-    aggregate, not raw events, so the window input is |users|."""
-    e = _t(spark, sf_dir, "events")
-    u = (e.groupBy("user_id")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("x"),
-              F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)))
-              .cast("decimal(38,0)").alias("y")))
-    r = u.select(
-        (F.lit(2) * (F.rank().over(Window.orderBy("x")) - 1)
-         + F.count(F.lit(1)).over(Window.partitionBy("x")) + 1)
-        .cast("decimal(38,0)").alias("rx2"),
-        (F.lit(2) * (F.rank().over(Window.orderBy("y")) - 1)
-         + F.count(F.lit(1)).over(Window.partitionBy("y")) + 1)
-        .cast("decimal(38,0)").alias("ry2"))
-    s = r.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-              F.sum("rx2").alias("sx"), F.sum("ry2").alias("sy"),
-              F.sum(F.col("rx2") * F.col("ry2")).alias("sxy"),
-              F.sum(F.col("rx2") * F.col("rx2")).alias("sxx"),
-              F.sum(F.col("ry2") * F.col("ry2")).alias("syy"))
-    t = s.select("n", (F.col("n") * F.col("sxy")
-                       - F.col("sx") * F.col("sy")).alias("num"),
-                 (F.col("n") * F.col("sxx")
-                  - F.col("sx") * F.col("sx")).alias("vx"),
-                 (F.col("n") * F.col("syy")
-                  - F.col("sy") * F.col("sy")).alias("vy"))
-    return t.select(
-        F.col("n").cast("long").alias("n"),
-        F.col("num").cast("long").alias("num"),
-        F.col("vx").cast("long").alias("vx"),
-        F.col("vy").cast("long").alias("vy"),
-        F.when(F.col("num") < 0, -1).when(F.col("num") > 0, 1).otherwise(0)
-        .cast("int").alias("rho_sign"),
-        F.expr("CAST(((num * 1000000000 div vx) * (num * 1000000000 div vy))"
-               " div 1000000000000 AS BIGINT)").alias("rho2_e6"))
-
-
-_RUNS_TEST_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS HUGEINT) AS c
-  FROM events GROUP BY 1
-), med AS (
-  SELECT c AS m FROM (
-    SELECT c, row_number() OVER (ORDER BY c, d) AS rn,
-           count(*) OVER () AS n
-    FROM daily
-  ) WHERE rn = (n + 1) // 2
-), lab AS (
-  SELECT d, CASE WHEN c > (SELECT m FROM med) THEN 1 ELSE 0 END AS above
-  FROM daily
-), runs AS (
-  SELECT above,
-         CASE WHEN lag(above) OVER (ORDER BY d) IS DISTINCT FROM above
-              THEN 1 ELSE 0 END AS brk
-  FROM lab
-)
-SELECT CAST(count(*) AS BIGINT) AS n_days,
-       CAST(sum(above) AS BIGINT) AS n_above,
-       CAST(count(*) - sum(above) AS BIGINT) AS n_below,
-       CAST(sum(brk) AS BIGINT) AS n_runs,
-       CAST(CASE WHEN count(*) > 0
-            THEN (2 * CAST(sum(above) AS HUGEINT)
-                  * (count(*) - sum(above)) * 1000000) // count(*) + 1000000
-            ELSE 0 END AS BIGINT) AS expected_runs_e6
-FROM runs
-"""
-
-
-@register("q_events_runs_test", _RUNS_TEST_SQL)
-def q_events_runs_test(spark, sf_dir):
-    """Wald-Wolfowitz runs test on the daily-volume series: days are
-    labeled above/below the exact lower median (value at position
-    (n+1) div 2 of the (count, day)-ordered series — ties land below, a
-    disclosed convention), runs counted with one lag window, and the
-    null-expected run count 2n₁n₂/n + 1 emitted as e6 fixed point. The
-    randomness screen a metrics pipeline runs before trusting a trend:
-    too few runs ⇒ regime persistence, too many ⇒ oscillation. Windows
-    run over DAYS (one row per day after the first aggregate)."""
-    daily = (_t(spark, sf_dir, "events")
-             .groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("c")))
-    ranked = daily.select(
-        "d", "c", F.row_number().over(Window.orderBy("c", "d")).alias("rn"),
-        F.count(F.lit(1)).over(
-            Window.rowsBetween(Window.unboundedPreceding,
-                               Window.unboundedFollowing)).alias("n"))
-    med = (ranked.filter(F.expr("rn = (n + 1) div 2"))
-           .select(F.col("c").alias("m")))
-    lab = (daily.crossJoin(F.broadcast(med))
-           .select("d", F.when(F.col("c") > F.col("m"), 1).otherwise(0)
-                   .alias("above")))
-    runs = lab.select(
-        "above",
-        F.when(F.lag("above").over(Window.orderBy("d")).isNull()
-               | (F.lag("above").over(Window.orderBy("d"))
-                  != F.col("above")), 1).otherwise(0).alias("brk"))
-    return runs.agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum("above").cast("long").alias("n_above"),
-        (F.count(F.lit(1)) - F.sum("above")).cast("long").alias("n_below"),
-        F.sum("brk").cast("long").alias("n_runs"),
-        F.expr(
-            "CAST(CASE WHEN count(*) > 0 THEN"
-            " (2 * CAST(sum(above) AS DECIMAL(38,0))"
-            " * (count(*) - sum(above)) * 1000000) div count(*) + 1000000"
-            " ELSE 0 END AS BIGINT)").alias("expected_runs_e6"))
-
-
-_ATTRIBUTION_SQL = """
-WITH h AS (
-  SELECT event_type,
-         first_value(CASE WHEN event_type <> 'purchase' THEN event_type END
-                     IGNORE NULLS)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS first_ch,
-         last_value(CASE WHEN event_type <> 'purchase' THEN event_type END
-                    IGNORE NULLS)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id
-                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS last_ch
-  FROM events
-), conv AS (
-  SELECT first_ch, last_ch FROM h
-  WHERE event_type = 'purchase' AND last_ch IS NOT NULL
-), f AS (SELECT first_ch AS channel, count(*) AS n FROM conv GROUP BY 1),
-l AS (SELECT last_ch AS channel, count(*) AS n FROM conv GROUP BY 1)
-SELECT coalesce(f.channel, l.channel) AS channel,
-       CAST(coalesce(f.n, 0) AS BIGINT) AS first_touch,
-       CAST(coalesce(l.n, 0) AS BIGINT) AS last_touch
-FROM f FULL JOIN l ON l.channel = f.channel
-"""
-
-
-@register("q_events_attribution", _ATTRIBUTION_SQL)
-def q_events_attribution(spark, sf_dir):
-    """First-touch vs last-touch conversion attribution: each purchase is
-    credited to the user's earliest non-purchase event (first touch) and
-    to the most recent one strictly before it (last touch), then
-    conversions are counted per channel under both models — the marketing
-    question every event pipeline answers, and a window shape the rest of
-    the registry lacks (conditional first/last with IGNORE NULLS over a
-    bounded preceding frame, deterministic (ts, event_id) order).
-    Purchases with no prior touch are excluded under BOTH models so the
-    two columns total identically. One shuffle on user_id; the frame
-    carries two strings of state, never the user's history."""
-    e = _t(spark, sf_dir, "events")
-    w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    touch = F.when(F.col("event_type") != "purchase", F.col("event_type"))
-    h = e.select(
-        "event_type",
-        F.first(touch, ignorenulls=True).over(w).alias("first_ch"),
-        F.last(touch, ignorenulls=True).over(w).alias("last_ch"))
-    conv = (h.filter((F.col("event_type") == "purchase")
-                     & F.col("last_ch").isNotNull()))
-    f = (conv.groupBy(F.col("first_ch").alias("channel"))
-         .agg(F.count(F.lit(1)).alias("nf")))
-    lt = (conv.groupBy(F.col("last_ch").alias("channel"))
-          .agg(F.count(F.lit(1)).alias("nl")))
-    return (f.join(lt, "channel", "full")
-            .select("channel",
-                    F.coalesce("nf", F.lit(0)).cast("long")
-                    .alias("first_touch"),
-                    F.coalesce("nl", F.lit(0)).cast("long")
-                    .alias("last_touch")))
 
 
 _KFOLD_SQL = """
@@ -12461,2850 +6379,6 @@ def data_kfold_split(spark, sf_dir):
     return (r.groupBy("lang", (F.col("rn") % 5).cast("int").alias("fold"))
             .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
                  F.sum("n_chars").cast("long").alias("sum_chars")))
-
-
-_TRANSITIVITY_SQL = f"""
-WITH m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), deg AS (
-  SELECT term AS node, CAST(count(*) AS HUGEINT) AS d FROM (
-    SELECT a AS term FROM e UNION ALL SELECT b FROM e
-  ) GROUP BY term
-), tri AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n_tri
-  FROM e e1 JOIN e e2 ON e2.a = e1.b
-  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-), agg AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n_nodes,
-         sum(d * (d - 1) // 2) AS n_wedges
-  FROM deg
-)
-SELECT CAST(agg.n_nodes AS BIGINT) AS n_nodes,
-       CAST((SELECT count(*) FROM e) AS BIGINT) AS n_edges,
-       CAST(agg.n_wedges AS BIGINT) AS n_wedges,
-       CAST(tri.n_tri AS BIGINT) AS n_triangles,
-       CAST(CASE WHEN agg.n_wedges > 0
-            THEN 3 * tri.n_tri * 1000000 // agg.n_wedges
-            ELSE 0 END AS BIGINT) AS transitivity_e6
-FROM agg CROSS JOIN tri
-"""
-
-
-@register("kg_transitivity_docs", _TRANSITIVITY_SQL)
-def kg_transitivity_docs(spark, sf_dir):
-    """Global clustering coefficient (transitivity) of the documents
-    co-occurrence graph: 3·triangles / wedges with wedges = Σd(d−1)/2,
-    as one exact e6 ratio — the whole-graph closure-density number that
-    complements the per-node local coefficients kg_triangles_docs emits
-    (operators/graph_algos.triangle_counts; the reference reports
-    whole-graph stats in its graph summary path, graph_tools.py). The
-    triangle total re-derives from the per-node counts (Σ/3 — every
-    triangle has exactly 3 corners, so the sum is always divisible);
-    wedges come from the degree table. All integer arithmetic."""
-    from .operators.graph_algos import triangle_counts
-    edges = _cooc_edges(spark, sf_dir)
-    tc = triangle_counts(edges, src="term_a", dst="term_b")
-    agg = tc.agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n_nodes"),
-        F.sum(F.expr("CAST(degree AS DECIMAL(38,0))"
-                     " * (degree - 1) div 2")).alias("n_wedges"),
-        (F.sum(F.col("triangles").cast("decimal(38,0)"))
-         / F.lit(3)).cast("decimal(38,0)").alias("n_tri"))
-    n_edges = edges.agg(F.count(F.lit(1)).alias("ne"))
-    return (agg.crossJoin(F.broadcast(n_edges))
-            .select(F.col("n_nodes").cast("long").alias("n_nodes"),
-                    F.col("ne").cast("long").alias("n_edges"),
-                    F.col("n_wedges").cast("long").alias("n_wedges"),
-                    F.col("n_tri").cast("long").alias("n_triangles"),
-                    F.expr("CAST(CASE WHEN n_wedges > 0 THEN"
-                           " 3 * n_tri * 1000000 div n_wedges"
-                           " ELSE 0 END AS BIGINT)")
-                    .alias("transitivity_e6")))
-
-
-_XCORR_LAGS = 7
-
-_XCORR_SQL = f"""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d,
-         CAST(count(*) FILTER (WHERE event_type = 'click') AS HUGEINT) AS x,
-         CAST(count(*) FILTER (WHERE event_type = 'purchase') AS HUGEINT) AS y
-  FROM events GROUP BY 1
-), p AS (
-  SELECT l.l AS lag, a.x, b.y
-  FROM range(0, {_XCORR_LAGS}) l(l)
-  JOIN daily a ON true
-  JOIN daily b ON b.d = a.d + CAST(l.l AS INTEGER)
-), s AS (
-  SELECT lag, CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy,
-         sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy
-  FROM p GROUP BY 1
-), t AS (
-  SELECT lag, n, n * sxy - sx * sy AS num,
-         n * sxx - sx * sx AS vx, n * syy - sy * sy AS vy
-  FROM s
-)
-SELECT CAST(lag AS INTEGER) AS lag, CAST(n AS BIGINT) AS n_pairs,
-       CAST(num AS BIGINT) AS num, CAST(vx AS BIGINT) AS vx,
-       CAST(vy AS BIGINT) AS vy,
-       CAST(CASE WHEN num < 0 THEN -1 WHEN num > 0 THEN 1 ELSE 0 END
-            AS INTEGER) AS rho_sign,
-       CAST(CASE WHEN vx > 0 AND vy > 0 THEN
-            ((num * 1000000000 // vx) * (num * 1000000000 // vy))
-            // 1000000000000 ELSE 0 END AS BIGINT) AS rho2_e6
-FROM t
-"""
-
-
-@register("q_events_cross_correlation", _XCORR_SQL)
-def q_events_cross_correlation(spark, sf_dir):
-    """Lead-lag cross-correlation profile: Pearson between click volume on
-    day t and purchase volume on day t+L for L = 0..6 — the 'which metric
-    leads which' question behind conversion-delay estimation. Same exact
-    arithmetic as q_events_spearman: five integer sums per lag, then the
-    divide-first ρ² e6 fixed point plus sign and the raw (num, vx, vy)
-    integers. The lag fan-out is a 7-row range cross join against the
-    DAILY aggregate (never against raw events), then one equi-join on
-    shifted day — |days|·7 rows total regardless of event count."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                        .otherwise(0)).cast("decimal(38,0)").alias("x"),
-                  F.sum(F.when(F.col("event_type") == "purchase", 1)
-                        .otherwise(0)).cast("decimal(38,0)").alias("y")))
-    lags = spark.range(0, _XCORR_LAGS).select(F.col("id").alias("lag"))
-    a = daily.select("d", "x")
-    b = daily.select(F.col("d").alias("d2"), "y")
-    p = (F.broadcast(lags).crossJoin(a)
-         .join(b, F.expr("d2 = date_add(d, CAST(lag AS INT))")))
-    s = p.groupBy("lag").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-        F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("y") * F.col("y")).alias("syy"))
-    t = s.select("lag", "n",
-                 (F.col("n") * F.col("sxy")
-                  - F.col("sx") * F.col("sy")).alias("num"),
-                 (F.col("n") * F.col("sxx")
-                  - F.col("sx") * F.col("sx")).alias("vx"),
-                 (F.col("n") * F.col("syy")
-                  - F.col("sy") * F.col("sy")).alias("vy"))
-    return t.select(
-        F.col("lag").cast("int").alias("lag"),
-        F.col("n").cast("long").alias("n_pairs"),
-        F.col("num").cast("long").alias("num"),
-        F.col("vx").cast("long").alias("vx"),
-        F.col("vy").cast("long").alias("vy"),
-        F.when(F.col("num") < 0, -1).when(F.col("num") > 0, 1).otherwise(0)
-        .cast("int").alias("rho_sign"),
-        F.expr("CAST(CASE WHEN vx > 0 AND vy > 0 THEN"
-               " ((num * 1000000000 div vx) * (num * 1000000000 div vy))"
-               " div 1000000000000 ELSE 0 END AS BIGINT)").alias("rho2_e6"))
-
-
-_KEYWORD_CHI2_SQL = """
-WITH m AS (
-  SELECT DISTINCT doc_id, source, tok FROM (
-    SELECT doc_id, source, unnest(string_split(text, ' ')) AS tok
-    FROM documents
-  ) WHERE tok <> ''
-), n AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM documents),
-srcs AS (SELECT source, CAST(count(*) AS HUGEINT) AS ns
-         FROM documents GROUP BY 1),
-dfs AS (
-  SELECT tok, CAST(count(DISTINCT doc_id) AS HUGEINT) AS df
-  FROM m GROUP BY 1
-), a AS (
-  SELECT source, tok, CAST(count(*) AS HUGEINT) AS a
-  FROM m GROUP BY 1, 2
-), chi AS (
-  SELECT a.source, a.tok, a.a, srcs.ns, dfs.df, n.n,
-         (n.n * (a.a * (n.n - srcs.ns - dfs.df + a.a)
-                 - (srcs.ns - a.a) * (dfs.df - a.a))
-              * (a.a * (n.n - srcs.ns - dfs.df + a.a)
-                 - (srcs.ns - a.a) * (dfs.df - a.a)) * 1000000)
-         // (srcs.ns * (n.n - srcs.ns) * dfs.df * (n.n - dfs.df)) AS chi2_e6
-  FROM a JOIN srcs USING (source) JOIN dfs USING (tok) CROSS JOIN n
-  WHERE dfs.df >= 20 AND dfs.df <= n.n - 20 AND srcs.ns < n.n
-), ranked AS (
-  SELECT source, tok AS token, CAST(a AS BIGINT) AS df_in_source,
-         CAST(ns AS BIGINT) AS n_source_docs, CAST(df AS BIGINT) AS df_global,
-         CAST(chi2_e6 AS BIGINT) AS chi2_e6,
-         row_number() OVER (PARTITION BY source
-                            ORDER BY chi2_e6 DESC, tok) AS rank
-  FROM chi
-)
-SELECT source, CAST(rank AS INTEGER) AS rank, token, df_in_source,
-       n_source_docs, df_global, chi2_e6
-FROM ranked WHERE rank <= 5
-"""
-
-
-@register("text_keyword_chi2", _KEYWORD_CHI2_SQL)
-def text_keyword_chi2(spark, sf_dir):
-    """Supervised keyword selection: per-source discriminative unigrams by
-    χ² over the 2×2 doc-presence contingency (in-source-with-term vs the
-    three complements), the classic feature-selection score — top 5 per
-    source, exact e6 fixed point via N(ad−bc)²·10⁶ div (row/col marginal
-    product). Tokens thinned to 20 ≤ df ≤ N−20 (a term in almost no or
-    almost every doc discriminates nothing and would divide by ~0). Doc
-    presence dedups BEFORE counting (one distinct on (doc, token)), both
-    marginal tables broadcast; the per-source top-k window partitions by
-    source. Exact while N⁵·10⁶ < 10³⁸ (N ≲ 10⁶ docs per comparison slice
-    — shard by lang/domain above that, as the reference's corpus slicing
-    does)."""
-    d = _t(spark, sf_dir, "documents")
-    m = (d.select("doc_id", "source",
-                  F.explode(F.split("text", " ")).alias("tok"))
-         .filter(F.col("tok") != "").distinct())
-    n = d.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"))
-    srcs = d.groupBy("source").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("ns"))
-    dfs = m.groupBy("tok").agg(
-        F.countDistinct("doc_id").cast("decimal(38,0)").alias("df"))
-    a = m.groupBy("source", "tok").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("a"))
-    chi = (a.join(F.broadcast(srcs), "source").join(dfs, "tok")
-           .crossJoin(F.broadcast(n))
-           .filter((F.col("df") >= 20) & (F.col("df") <= F.col("n") - 20)
-                   & (F.col("ns") < F.col("n")))
-           .withColumn("chi2_e6", F.expr(
-               "(n * (a * (n - ns - df + a) - (ns - a) * (df - a))"
-               " * (a * (n - ns - df + a) - (ns - a) * (df - a)) * 1000000)"
-               " div (ns * (n - ns) * df * (n - df))")))
-    w = Window.partitionBy("source").orderBy(F.col("chi2_e6").desc(), "tok")
-    return (chi.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 5)
-            .select("source", F.col("rank").cast("int").alias("rank"),
-                    F.col("tok").alias("token"),
-                    F.col("a").cast("long").alias("df_in_source"),
-                    F.col("ns").cast("long").alias("n_source_docs"),
-                    F.col("df").cast("long").alias("df_global"),
-                    F.col("chi2_e6").cast("long").alias("chi2_e6")))
-
-
-_TYPE_AFFINITY_SQL = """
-WITH u AS (
-  SELECT DISTINCT user_id, event_type FROM events
-), t AS (SELECT event_type, CAST(count(*) AS HUGEINT) AS n FROM u GROUP BY 1),
-nu AS (SELECT CAST(count(DISTINCT user_id) AS HUGEINT) AS nu FROM u),
-p AS (
-  SELECT a.event_type AS type_a, b.event_type AS type_b,
-         CAST(count(*) AS HUGEINT) AS common
-  FROM u a JOIN u b ON b.user_id = a.user_id
-    AND a.event_type < b.event_type
-  GROUP BY 1, 2
-)
-SELECT type_a, type_b, CAST(common AS BIGINT) AS common_users,
-       CAST(ta.n AS BIGINT) AS n_a, CAST(tb.n AS BIGINT) AS n_b,
-       CAST(common * 1000000 // (ta.n + tb.n - common) AS BIGINT)
-           AS jaccard_e6,
-       CAST(common * nu.nu * 1000000 // (ta.n * tb.n) AS BIGINT) AS lift_e6
-FROM p JOIN t ta ON ta.event_type = p.type_a
-JOIN t tb ON tb.event_type = p.type_b CROSS JOIN nu
-"""
-
-
-@register("q_events_type_affinity", _TYPE_AFFINITY_SQL)
-def q_events_type_affinity(spark, sf_dir):
-    """Bipartite projection of the user×event-type graph onto event types:
-    for each type pair, the co-engaged-user count with exact Jaccard and
-    lift e6 (lift = common·|U| / (n_a·n_b) — >1e6 means the audiences
-    attract). The projection self-join runs on the DISTINCT (user, type)
-    table — bounded by |users|·|types|, never raw events — and pair
-    cardinality is |types|², not |users|² (the projection direction is
-    the scale decision: projecting onto USERS would be quadratic in the
-    audience of hot types)."""
-    e = _t(spark, sf_dir, "events")
-    u = e.select("user_id", "event_type").distinct()
-    t = u.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"))
-    nu = u.agg(F.countDistinct("user_id").cast("decimal(38,0)").alias("nu"))
-    b = u.select(F.col("user_id").alias("uid2"),
-                 F.col("event_type").alias("type_b"))
-    p = (u.join(b, (F.col("uid2") == F.col("user_id"))
-                & (F.col("event_type") < F.col("type_b")))
-         .groupBy(F.col("event_type").alias("type_a"), "type_b")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("common")))
-    ta = t.select(F.col("event_type").alias("type_a"), F.col("n").alias("na"))
-    tb = t.select(F.col("event_type").alias("type_b"), F.col("n").alias("nb"))
-    return (p.join(F.broadcast(ta), "type_a").join(F.broadcast(tb), "type_b")
-            .crossJoin(F.broadcast(nu))
-            .select("type_a", "type_b",
-                    F.col("common").cast("long").alias("common_users"),
-                    F.col("na").cast("long").alias("n_a"),
-                    F.col("nb").cast("long").alias("n_b"),
-                    F.expr("CAST(common * 1000000 div (na + nb - common)"
-                           " AS BIGINT)").alias("jaccard_e6"),
-                    F.expr("CAST(common * nu * 1000000 div (na * nb)"
-                           " AS BIGINT)").alias("lift_e6")))
-
-
-_MARKOV_PI_SCALE = 10**12
-_MARKOV_PI_ITERS = 12
-
-
-def _markov_stationary_sql(iters: int = _MARKOV_PI_ITERS,
-                           scale: int = _MARKOV_PI_SCALE) -> str:
-    """Fixed-point power-iteration oracle for the stationary distribution:
-    the same integer recurrence the Spark side runs, unrolled one
-    MATERIALIZED CTE per step (the PageRank-oracle technique) — per-edge
-    contribution (π·n) // ns floor-divided identically, so any engine
-    agrees bit-for-bit."""
-    head = f"""
-WITH s AS (
-  SELECT event_type AS src,
-         lead(event_type, 1) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM events
-), c AS MATERIALIZED (
-  SELECT src, dst, CAST(count(*) AS HUGEINT) AS n
-  FROM s WHERE dst IS NOT NULL GROUP BY 1, 2
-), t AS MATERIALIZED (SELECT src, sum(n) AS ns FROM c GROUP BY 1),
-states AS MATERIALIZED (
-  SELECT src AS st FROM c UNION SELECT dst FROM c
-), k AS MATERIALIZED (SELECT CAST(count(*) AS HUGEINT) AS k FROM states),
-p0 AS MATERIALIZED (SELECT st, CAST({scale} AS HUGEINT) // k.k AS p
-                    FROM states, k)"""
-    steps = []
-    for i in range(1, iters + 1):
-        prev = f"p{i - 1}"
-        steps.append(f""",
-p{i} AS MATERIALIZED (
-  SELECT states.st, coalesce(sum((pp.p * c.n) // t.ns), 0) AS p
-  FROM states
-  LEFT JOIN c ON c.dst = states.st
-  LEFT JOIN {prev} pp ON pp.st = c.src
-  LEFT JOIN t ON t.src = c.src
-  GROUP BY states.st
-)""")
-    return (head + "".join(steps) + f"""
-SELECT p{iters}.st AS state, CAST(p{iters}.p AS BIGINT) AS pi_scaled,
-       CAST(coalesce(t.ns, 0) AS BIGINT) AS n_out
-FROM p{iters} LEFT JOIN t ON t.src = p{iters}.st""")
-
-
-@register("q_events_markov_stationary", _markov_stationary_sql())
-def q_events_markov_stationary(spark, sf_dir):
-    """Stationary distribution of the event-type Markov chain by 12 steps
-    of integer fixed-point power iteration (π·10¹² start, per-edge
-    contribution (π_i·n_ij) div ns_i — the scaled-integer discipline of
-    operators/graph_algos.pagerank_scaled, so the result is exact and
-    partitioning-independent; states with no outgoing transitions shed
-    their mass, faithfully to the raw recurrence). The long-run 'where
-    does a user's session settle' complement to q_events_markov's
-    one-step matrix. The chain is vocabulary-bounded (|event types|
-    states), so each iteration is a tiny broadcast join regardless of
-    event count."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = e.select(F.col("event_type").alias("src"),
-                 F.lead("event_type", 1).over(w).alias("dst"))
-    c = (s.filter(F.col("dst").isNotNull())
-         .groupBy("src", "dst")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n")))
-    t = c.groupBy("src").agg(F.sum("n").alias("ns"))
-    states = (c.select(F.col("src").alias("st"))
-              .union(c.select("dst")).distinct())
-    k = states.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("k"))
-    p = (states.crossJoin(F.broadcast(k))
-         .select("st", F.expr(f"CAST({_MARKOV_PI_SCALE} AS DECIMAL(38,0))"
-                              " div k").cast("decimal(38,0)").alias("p")))
-    ct = c.join(t, "src")
-    for _ in range(_MARKOV_PI_ITERS):
-        contrib = (ct.join(F.broadcast(p), ct.src == p.st)
-                   .select(F.col("dst").alias("st"),
-                           F.expr("(p * n) div ns").cast("decimal(38,0)")
-                           .alias("pc")))
-        p = (states.join(contrib.groupBy("st").agg(F.sum("pc").alias("pin")),
-                         "st", "left")
-             .select("st", F.coalesce("pin", F.lit(0).cast("decimal(38,0)"))
-                     .cast("decimal(38,0)").alias("p")))
-    tt = t.select(F.col("src").alias("st"), "ns")
-    return (p.join(F.broadcast(tt), "st", "left")
-            .select(F.col("st").alias("state"),
-                    F.col("p").cast("long").alias("pi_scaled"),
-                    F.coalesce(F.col("ns"), F.lit(0).cast("decimal(38,0)"))
-                    .cast("long").alias("n_out")))
-
-
-_WEIGHTED_MEDIAN_SQL = """
-WITH j AS (
-  SELECT p.p_brand, CAST(l.l_extendedprice AS DECIMAL(18,2)) AS price,
-         CAST(l.l_quantity AS HUGEINT) AS w, l.l_orderkey, l.l_linenumber
-  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-), cum AS (
-  SELECT p_brand, price, w,
-         sum(w) OVER (PARTITION BY p_brand
-                      ORDER BY price, l_orderkey, l_linenumber) AS cw,
-         sum(w) OVER (PARTITION BY p_brand) AS tw,
-         count(*) OVER (PARTITION BY p_brand) AS n_lines
-  FROM j
-), sel AS (
-  SELECT p_brand, price, tw, n_lines,
-         row_number() OVER (PARTITION BY p_brand ORDER BY cw, price) AS rn
-  FROM cum WHERE 2 * cw >= tw
-)
-SELECT p_brand,
-       round(CAST(price AS DOUBLE), 2) AS median_price,
-       CAST(tw AS BIGINT) AS total_qty,
-       CAST(n_lines AS BIGINT) AS n_lines
-FROM sel WHERE rn = 1
-"""
-
-
-@register("q_lineitem_weighted_median", _WEIGHTED_MEDIAN_SQL)
-def q_lineitem_weighted_median(spark, sf_dir):
-    """Quantity-weighted median line price per brand — the weighted
-    percentile operator (each row counts w times, answer = first price
-    whose cumulative weight crosses half the total), which no built-in
-    percentile covers. Exact integer weights in a per-brand cumulative
-    window with a deterministic (price, orderkey, linenumber) order; the
-    SELECTED price is invariant to tie order because cumulative weight at
-    each price-group boundary is order-free. Brands partition the sort,
-    so no global order forms at scale."""
-    l = _t(spark, sf_dir, "lineitem")
-    pt = _t(spark, sf_dir, "part")
-    j = (l.join(pt, pt.p_partkey == l.l_partkey)
-         .select("p_brand",
-                 F.col("l_extendedprice").cast("decimal(18,2)")
-                 .alias("price"),
-                 F.col("l_quantity").cast("decimal(38,0)").alias("w"),
-                 "l_orderkey", "l_linenumber"))
-    wcum = (Window.partitionBy("p_brand")
-            .orderBy("price", "l_orderkey", "l_linenumber")
-            .rowsBetween(Window.unboundedPreceding, 0))
-    wall = Window.partitionBy("p_brand")
-    cum = j.select(
-        "p_brand", "price",
-        F.sum("w").over(wcum).alias("cw"),
-        F.sum("w").over(wall).alias("tw"),
-        F.count(F.lit(1)).over(wall).alias("n_lines"))
-    sel = (cum.filter(F.lit(2) * F.col("cw") >= F.col("tw"))
-           .withColumn("rn", F.row_number().over(
-               Window.partitionBy("p_brand").orderBy("cw", "price")))
-           .filter(F.col("rn") == 1))
-    return sel.select(
-        "p_brand",
-        F.round(F.col("price").cast("double"), 2).alias("median_price"),
-        F.col("tw").cast("long").alias("total_qty"),
-        F.col("n_lines").cast("long").alias("n_lines"))
-
-
-_KRUSKAL_SQL = """
-WITH d AS (
-  SELECT event_type AS g, CAST(floor("value" * 100 + 0.5) AS HUGEINT) AS y
-  FROM events
-), v AS (
-  SELECT y, CAST(count(*) AS HUGEINT) AS t FROM d GROUP BY 1
-), lw AS (
-  SELECT y, t, coalesce(sum(t) OVER (ORDER BY y
-    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS l
-  FROM v
-), gv AS (
-  SELECT g, y, CAST(count(*) AS HUGEINT) AS c FROM d GROUP BY 1, 2
-), tr AS (
-  SELECT gv.g, sum(gv.c) AS nj,
-         sum(gv.c * (2 * lw.l + lw.t + 1)) AS tr2
-  FROM gv JOIN lw USING (y) GROUP BY gv.g
-), nn AS (SELECT sum(nj) AS n FROM tr),
-ties AS (SELECT sum(t * t * t - t) AS tie_num FROM v),
-h AS (
-  SELECT nn.n, ties.tie_num,
-         (SELECT sum(3 * tr2 * tr2 * 1000000 // (4 * nj)) FROM tr) AS s_e6
-  FROM nn CROSS JOIN ties
-)
-SELECT CAST(n AS BIGINT) AS n,
-       (SELECT CAST(count(*) AS INTEGER) FROM tr) AS k,
-       CAST(tie_num AS BIGINT) AS tie_num,
-       CAST(s_e6 // (n * (n + 1)) - 3 * (n + 1) * 1000000 AS BIGINT) AS h_e6,
-       CAST((s_e6 // (n * (n + 1)) - 3 * (n + 1) * 1000000)
-            * (n * n * n - n) // (n * n * n - n - tie_num) AS BIGINT)
-           AS h_tie_corrected_e6
-FROM h
-"""
-
-
-@register("q_events_kruskal_wallis", _KRUSKAL_SQL)
-def q_events_kruskal_wallis(spark, sf_dir):
-    """Kruskal-Wallis H (k-sample rank test) across all five event types'
-    value distributions, tie-corrected, exact-integer: doubled midranks
-    (2·avgrank = 2L+T+1, the q_events_mann_whitney discipline), per-group
-    term 3·(ΣR×2)²·10⁶ div (4n_j) floored identically on both engines,
-    H = Σterms div N(N+1) − 3(N+1), and the tie correction applied as an
-    integer ratio ·(N³−N) div (N³−N−Σ(t³−t)). The ranking reduces to
-    DISTINCT VALUES before the single cumsum window (value cardinality,
-    not row count); groups aggregate map-side."""
-    e = _t(spark, sf_dir, "events")
-    d = e.select(F.col("event_type").alias("g"),
-                 F.floor(F.col("value") * 100 + F.lit(0.5))
-                 .cast("decimal(38,0)").alias("y"))
-    v = d.groupBy("y").agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("t"))
-    wl = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, -1)
-    lw = v.withColumn("l", F.coalesce(F.sum("t").over(wl),
-                                      F.lit(0).cast("decimal(38,0)")))
-    gv = d.groupBy("g", "y").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("c"))
-    tr = (gv.join(lw, "y")
-          .groupBy("g")
-          .agg(F.sum("c").alias("nj"),
-               F.sum(F.col("c") * (F.lit(2) * F.col("l")
-                                   + F.col("t") + 1)).alias("tr2")))
-    # Per-group term: 3·tr2²·10⁶/(4nj) ≡ 750000·tr2²/nj exactly (4 | 3·10⁶),
-    # floored via quotient/remainder decomposition — Spark's `div` always
-    # RETURNS BIGINT, and the direct term (~10²⁰ at sf0.1) overflows it;
-    # q = tr2² div nj and r·750000 div nj both fit long, and
-    # q·750000 + (r·750000 div nj) = floor(750000·tr2²/nj) identically
-    # (q·nj·750000/nj is integral), so the oracle's one-shot `//` matches.
-    terms = (tr.withColumn("q", F.expr("tr2 * tr2 div nj")
-                           .cast("decimal(38,0)"))
-             .withColumn("r", F.expr("tr2 * tr2 - q * nj"))
-             .agg(F.sum(F.expr("q * 750000 + (r * 750000 div nj)"))
-                  .alias("s_e6"),
-                  F.sum("nj").alias("n"),
-                  F.count(F.lit(1)).cast("int").alias("k")))
-    ties = v.agg(F.sum(F.expr("t * t * t - t")).alias("tie_num"))
-    return (terms.crossJoin(F.broadcast(ties))
-            .select(
-                F.col("n").cast("long").alias("n"), "k",
-                F.col("tie_num").cast("long").alias("tie_num"),
-                F.expr("CAST(s_e6 div (n * (n + 1))"
-                       " - 3 * (n + 1) * 1000000 AS BIGINT)").alias("h_e6"),
-                F.expr("CAST((s_e6 div (n * (n + 1))"
-                       " - 3 * (n + 1) * 1000000) * (n * n * n - n)"
-                       " div (n * n * n - n - tie_num) AS BIGINT)")
-                .alias("h_tie_corrected_e6")))
-
-
-_DP_NOISE_B = "2.0"
-
-_DP_NOISE_SQL = f"""
-WITH cell AS (
-  SELECT event_type, CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), u AS (
-  SELECT event_type, d, c,
-         CAST(CAST(concat('0x', substr(md5(concat('dp:', event_type, ':',
-              CAST(d AS VARCHAR))), 1, 16)) AS UBIGINT) AS DOUBLE)
-         / 18446744073709551616.0 AS u
-  FROM cell
-)
-SELECT event_type, d AS day, c AS true_count,
-       round(CASE WHEN u < 0.5
-             THEN {_DP_NOISE_B} * ln(2.0 * u)
-             ELSE -{_DP_NOISE_B} * ln(2.0 - 2.0 * u) END, 6) AS noise,
-       round(c + (CASE WHEN u < 0.5
-             THEN {_DP_NOISE_B} * ln(2.0 * u)
-             ELSE -{_DP_NOISE_B} * ln(2.0 - 2.0 * u) END), 6)
-           AS noisy_count
-FROM u
-"""
-
-
-@register("q_events_dp_noise", _DP_NOISE_SQL)
-def q_events_dp_noise(spark, sf_dir):
-    """Differential-privacy-style count release: per-(type, day) cells get
-    Laplace(b=2) noise via the inverse CDF applied to a DETERMINISTIC
-    md5-derived uniform (the Efraimidis-Spirakis-sampling discipline:
-    u = first 16 md5 hex chars / 2⁶⁴, an exactly-rounded IEEE division
-    both engines agree on bit-for-bit) — so the privacy mechanism itself
-    is testable cross-engine, which real RNG noise never is. The inverse
-    CDF branches at u=0.5 (b·ln(2u) below, −b·ln(2−2u) above); ln runs on
-    identical doubles and the result is rounded to 6 dp (the
-    q_events_entropy_rate float-log discipline, verified at 3 scales).
-    Map-side only after the cell aggregate — no joins, no windows."""
-    e = _t(spark, sf_dir, "events")
-    cell = (e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-            .agg(F.count(F.lit(1)).cast("long").alias("c")))
-    u = F.conv(F.substring(F.md5(F.concat(
-        F.lit("dp:"), F.col("event_type"), F.lit(":"),
-        F.col("d").cast("string"))), 1, 16), 16, 10) \
-        .cast("decimal(20,0)").cast("double") / F.lit(18446744073709551616.0)
-    noise = (F.when(F.col("u") < 0.5,
-                    F.lit(float(_DP_NOISE_B)) * F.log(2.0 * F.col("u")))
-             .otherwise(-F.lit(float(_DP_NOISE_B))
-                        * F.log(2.0 - 2.0 * F.col("u"))))
-    return (cell.withColumn("u", u)
-            .select("event_type", F.col("d").alias("day"),
-                    F.col("c").alias("true_count"),
-                    F.round(noise, 6).alias("noise"),
-                    F.round(F.col("c") + noise, 6).alias("noisy_count")))
-
-
-_FILTER_FUNNEL_SQL = """
-WITH f AS (
-  SELECT CASE WHEN n_chars >= 200 THEN 1 ELSE 0 END AS s1,
-         CASE WHEN n_chars >= 200 AND
-              len(list_filter(string_split(text, ' '), w -> w <> '')) >= 30
-              THEN 1 ELSE 0 END AS s2,
-         CASE WHEN n_chars >= 200 AND
-              len(list_filter(string_split(text, ' '), w -> w <> '')) >= 30
-              AND len(list_distinct(list_filter(string_split(text, ' '),
-                                                w -> w <> ''))) * 10 >=
-                  len(list_filter(string_split(text, ' '), w -> w <> '')) * 3
-              THEN 1 ELSE 0 END AS s3,
-         CASE WHEN doc_id = min(doc_id) OVER (PARTITION BY md5(text))
-              THEN 1 ELSE 0 END AS keeper
-  FROM documents
-), agg AS (
-  SELECT CAST(count(*) AS BIGINT) AS n0, CAST(sum(s1) AS BIGINT) AS n1,
-         CAST(sum(s2) AS BIGINT) AS n2, CAST(sum(s3) AS BIGINT) AS n3,
-         CAST(sum(CASE WHEN s3 = 1 AND keeper = 1 THEN 1 ELSE 0 END)
-              AS BIGINT) AS n4
-  FROM f
-)
-SELECT stage, label, n_surviving,
-       lag(n_surviving, 1, n_surviving) OVER (ORDER BY stage) - n_surviving
-           AS n_dropped
-FROM (
-  SELECT 0 AS stage, 'all_docs' AS label, n0 AS n_surviving FROM agg
-  UNION ALL SELECT 1, 'min_chars_200', n1 FROM agg
-  UNION ALL SELECT 2, 'min_words_30', n2 FROM agg
-  UNION ALL SELECT 3, 'distinct_ratio_30pct', n3 FROM agg
-  UNION ALL SELECT 4, 'exact_dedup_keeper', n4 FROM agg
-)
-"""
-
-
-@register("data_filter_funnel", _FILTER_FUNNEL_SQL)
-def data_filter_funnel(spark, sf_dir):
-    """Sequential quality-filter survival funnel — the per-stage yield
-    report every training-data pipeline publishes before a run (how many
-    docs survive length → word-count → lexical-diversity → exact-dedup,
-    and where the losses concentrate). Stages are CUMULATIVE (a doc must
-    pass all earlier gates), the dedup keeper is min(doc_id) per
-    md5(text) group, and the whole funnel is ONE scan + one aggregate —
-    stage counts are conditional sums, never one pass per stage (at 100
-    TB, 5 passes vs 1 is the difference)."""
-    d = _t(spark, sf_dir, "documents")
-    words = F.filter(F.split("text", " "), lambda w: w != "")
-    s1 = (F.col("n_chars") >= 200).cast("int")
-    s2 = (s1 == 1) & (F.size(words) >= 30)
-    s3 = s2 & (F.size(F.array_distinct(words)) * 10 >= F.size(words) * 3)
-    keeper = (F.col("doc_id")
-              == F.min("doc_id").over(Window.partitionBy(F.md5("text"))))
-    f = d.select(s1.alias("s1"), s2.cast("int").alias("s2"),
-                 s3.cast("int").alias("s3"), keeper.cast("int").alias("keeper"))
-    agg = f.agg(F.count(F.lit(1)).cast("long").alias("n0"),
-                F.sum("s1").cast("long").alias("n1"),
-                F.sum("s2").cast("long").alias("n2"),
-                F.sum("s3").cast("long").alias("n3"),
-                F.sum(((F.col("s3") == 1) & (F.col("keeper") == 1))
-                      .cast("int")).cast("long").alias("n4"))
-    stages = agg.select(F.expr(
-        "stack(5, 0, 'all_docs', n0, 1, 'min_chars_200', n1,"
-        " 2, 'min_words_30', n2, 3, 'distinct_ratio_30pct', n3,"
-        " 4, 'exact_dedup_keeper', n4) AS (stage, label, n_surviving)"))
-    wl = Window.orderBy("stage")
-    return stages.select(
-        "stage", "label", "n_surviving",
-        (F.coalesce(F.lag("n_surviving", 1).over(wl), F.col("n_surviving"))
-         - F.col("n_surviving")).alias("n_dropped"))
-
-
-_MARKOV2_SQL = """
-WITH s AS (
-  SELECT user_id, event_type,
-         lag(event_type, 1) OVER w AS prev1,
-         lag(event_type, 2) OVER w AS prev2
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), c AS (
-  SELECT prev2, prev1, event_type AS next, CAST(count(*) AS HUGEINT) AS n
-  FROM s WHERE prev2 IS NOT NULL GROUP BY 1, 2, 3
-), ctx AS (
-  SELECT prev2, prev1, sum(n) AS total FROM c GROUP BY 1, 2
-)
-SELECT c.prev2, c.prev1, c.next, CAST(c.n AS BIGINT) AS n,
-       CAST(ctx.total AS BIGINT) AS ctx_total,
-       CAST(c.n * 1000000 // ctx.total AS BIGINT) AS p_e6
-FROM c JOIN ctx USING (prev2, prev1)
-WHERE ctx.total >= 20
-"""
-
-
-@register("q_events_markov2", _MARKOV2_SQL)
-def q_events_markov2(spark, sf_dir):
-    """Second-order Markov transitions: P(next | prev2, prev1) over each
-    user's event sequence — the memory-two refinement of
-    q_events_markov_transitions that detects patterns a first-order chain
-    collapses (e.g. view→click→purchase vs click→view→purchase). Two lag
-    windows share ONE (user, ts) sort via a named WINDOW; contexts
-    thinner than 20 observations are suppressed (rate-from-noise floor).
-    Exact e6 conditional probabilities."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = e.select(F.col("event_type").alias("next"),
-                 F.lag("event_type", 1).over(w).alias("prev1"),
-                 F.lag("event_type", 2).over(w).alias("prev2"))
-    c = (s.filter(F.col("prev2").isNotNull())
-         .groupBy("prev2", "prev1", "next")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n")))
-    ctx = c.groupBy("prev2", "prev1").agg(F.sum("n").alias("total"))
-    return (c.join(ctx, ["prev2", "prev1"])
-            .filter(F.col("total") >= 20)
-            .select("prev2", "prev1", "next",
-                    F.col("n").cast("long").alias("n"),
-                    F.col("total").cast("long").alias("ctx_total"),
-                    F.expr("CAST(n * 1000000 div total AS BIGINT)")
-                    .alias("p_e6")))
-
-
-_DUP_ORDERS_SQL = """
-WITH o AS (
-  SELECT o_orderkey, o_custkey, o_orderdate,
-         CAST(floor(o_totalprice * 100 + 0.5) AS HUGEINT) AS cents
-  FROM orders
-)
-SELECT a.o_custkey AS custkey,
-       a.o_orderkey AS orderkey_a, b.o_orderkey AS orderkey_b,
-       CAST(datediff('day', a.o_orderdate, b.o_orderdate) AS INTEGER)
-           AS day_gap,
-       round(CAST(a.cents AS DOUBLE) / 100, 2) AS price_a,
-       round(CAST(b.cents AS DOUBLE) / 100, 2) AS price_b,
-       CAST(abs(a.cents - b.cents) * 1000000 // a.cents AS BIGINT)
-           AS rel_diff_e6
-FROM o a JOIN o b
-  ON b.o_custkey = a.o_custkey AND a.o_orderkey < b.o_orderkey
-  AND abs(datediff('day', a.o_orderdate, b.o_orderdate)) <= 7
-  AND abs(a.cents - b.cents) * 20 < a.cents
-"""
-
-
-@register("q_orders_duplicate_detection", _DUP_ORDERS_SQL)
-def q_orders_duplicate_detection(spark, sf_dir):
-    """Duplicate-transaction detection — the financial-data-quality screen:
-    order pairs from the same customer within 7 days whose totals differ
-    by <5%, flagged with the exact relative difference (e6, integer
-    cross-multiplication on cents — abs(Δ)·20 < price, never a float
-    tolerance). The self-join is EQUI on custkey (per-customer blocks)
-    with the date/price bands as post-filters, so candidate generation is
-    Σ|orders-per-customer|², bounded by account activity, not |orders|²
-    — whale accounts would take the salted-block treatment
-    (materialize._salted_topk discipline)."""
-    o = (_t(spark, sf_dir, "orders")
-         .select("o_orderkey", "o_custkey", "o_orderdate",
-                 F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-                 .cast("decimal(38,0)").alias("cents")))
-    b = o.select(F.col("o_orderkey").alias("okb"),
-                 F.col("o_custkey").alias("ckb"),
-                 F.col("o_orderdate").alias("odb"),
-                 F.col("cents").alias("centsb"))
-    return (o.join(b, (F.col("ckb") == F.col("o_custkey"))
-                   & (F.col("o_orderkey") < F.col("okb")))
-            .filter((F.abs(F.datediff(F.col("odb"), F.col("o_orderdate")))
-                     <= 7)
-                    & (F.abs(F.col("cents") - F.col("centsb")) * 20
-                       < F.col("cents")))
-            .select(F.col("o_custkey").alias("custkey"),
-                    F.col("o_orderkey").alias("orderkey_a"),
-                    F.col("okb").alias("orderkey_b"),
-                    F.datediff(F.col("odb"), F.col("o_orderdate"))
-                    .cast("int").alias("day_gap"),
-                    F.round(F.col("cents").cast("double") / 100, 2)
-                    .alias("price_a"),
-                    F.round(F.col("centsb").cast("double") / 100, 2)
-                    .alias("price_b"),
-                    F.expr("CAST(abs(cents - centsb) * 1000000 div cents"
-                           " AS BIGINT)").alias("rel_diff_e6")))
-
-
-_PRF_QUERY_TERMS = ("spark", "join", "vector")
-_PRF_FB_K = 10
-
-_PRF_SQL = f"""
-WITH fb AS MATERIALIZED (
-  SELECT doc_id FROM ({_bm25_sql(terms=_PRF_QUERY_TERMS, k=_PRF_FB_K)})
-), base AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                             w -> w != '') AS words
-  FROM documents
-), pres AS (
-  SELECT DISTINCT doc_id, unnest(words) AS tok FROM base
-), nn AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM documents),
-dfg AS (SELECT tok, CAST(count(*) AS HUGEINT) AS df FROM pres GROUP BY 1),
-dff AS (
-  SELECT tok, CAST(count(*) AS HUGEINT) AS dfb
-  FROM pres JOIN fb USING (doc_id) GROUP BY 1
-), scored AS (
-  SELECT tok AS token, CAST(dfb AS BIGINT) AS df_feedback,
-         CAST(df AS BIGINT) AS df_global,
-         CAST(dfb * nn.n * 1000000 // ({_PRF_FB_K} * df) AS BIGINT)
-             AS lift_e6
-  FROM dff JOIN dfg USING (tok) CROSS JOIN nn
-  WHERE dfb >= 3
-    AND tok NOT IN ({', '.join(repr(t) for t in _PRF_QUERY_TERMS)})
-)
-SELECT token, df_feedback, df_global, lift_e6,
-       CAST(rank AS INTEGER) AS rank
-FROM (SELECT *, row_number() OVER (ORDER BY lift_e6 DESC, token) AS rank
-      FROM scored)
-WHERE rank <= 15
-"""
-
-
-@register("search_prf_expansion", _PRF_SQL)
-def search_prf_expansion(spark, sf_dir):
-    """Pseudo-relevance-feedback query expansion (Rocchio-style, the
-    standard IR trick): run BM25, take the top-10 feedback docs, and rank
-    candidate expansion terms by how over-represented they are in the
-    feedback set vs the corpus — lift = (df_fb/10)/(df/N) as an exact e6
-    integer, floor ≥3 feedback docs, query terms excluded, top 15. The
-    feedback set is a broadcast 10-row table; candidate scoring is one
-    semi-joined presence aggregate against the global df table (both
-    map-side-combinable) — no per-query corpus rescan."""
-    from .operators.tfidf import bm25_rank
-    d = _t(spark, sf_dir, "documents")
-    fb = (bm25_rank(d, list(_PRF_QUERY_TERMS), k=_PRF_FB_K)
-          .select("doc_id"))
-    words = F.filter(F.split(F.lower(F.trim("text")), r"\s+"),
-                     lambda w: w != "")
-    pres = (d.select("doc_id", F.explode(words).alias("tok")).distinct())
-    nn = d.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"))
-    dfg = pres.groupBy("tok").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("df"))
-    dff = (pres.join(F.broadcast(fb), "doc_id")
-           .groupBy("tok")
-           .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("dfb")))
-    scored = (dff.join(dfg, "tok").crossJoin(F.broadcast(nn))
-              .filter((F.col("dfb") >= 3)
-                      & ~F.col("tok").isin(*_PRF_QUERY_TERMS))
-              .select(F.col("tok").alias("token"),
-                      F.col("dfb").cast("long").alias("df_feedback"),
-                      F.col("df").cast("long").alias("df_global"),
-                      F.expr(f"CAST(dfb * n * 1000000"
-                             f" div ({_PRF_FB_K} * df) AS BIGINT)")
-                      .alias("lift_e6")))
-    w = Window.orderBy(F.col("lift_e6").desc(), "token")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 15)
-            .select("token", "df_feedback", "df_global", "lift_e6",
-                    F.col("rank").cast("int").alias("rank")))
-
-
-_CONV_LATENCY_SQL = """
-WITH c AS (
-  SELECT user_id, min(ts) AS t0 FROM events
-  WHERE event_type = 'click' GROUP BY 1
-), p AS (
-  SELECT c.user_id,
-         CAST(epoch_us(min(e.ts)) // 1000000
-              - epoch_us(c.t0) // 1000000 AS BIGINT) AS secs
-  FROM c JOIN events e ON e.user_id = c.user_id
-    AND e.event_type = 'purchase' AND e.ts > c.t0
-  GROUP BY c.user_id, c.t0
-)
-SELECT CAST((SELECT count(*) FROM c) AS BIGINT) AS n_clickers,
-       CAST(count(*) AS BIGINT) AS n_converted,
-       CAST(count(*) * 1000000 // (SELECT count(*) FROM c) AS BIGINT)
-           AS conversion_e6,
-       CAST(quantile_disc(secs, 0.25) AS BIGINT) AS p25_secs,
-       CAST(quantile_disc(secs, 0.5) AS BIGINT) AS p50_secs,
-       CAST(quantile_disc(secs, 0.75) AS BIGINT) AS p75_secs,
-       CAST(quantile_disc(secs, 0.9) AS BIGINT) AS p90_secs
-FROM p
-"""
-
-
-@register("q_events_conversion_latency", _CONV_LATENCY_SQL)
-def q_events_conversion_latency(spark, sf_dir):
-    """Time-to-convert distribution: per user, seconds from FIRST click to
-    the first purchase strictly after it, with the conversion rate and
-    discontinuous (type-1, real-observation) latency percentiles — the
-    funnel-velocity number product teams watch alongside the conversion
-    funnel. Timestamps floor to epoch seconds via unix_micros div 1e6
-    (the q_events_ols_trend discipline); percentiles via the rank-window
-    + conditional-min pattern of q_events_percentile_disc. Two aggregates
-    on user_id (already the events shuffle key) + one broadcast-scale
-    count."""
-    e = _t(spark, sf_dir, "events")
-    c = (e.filter(F.col("event_type") == "click")
-         .groupBy("user_id").agg(F.min("ts").alias("t0")))
-    p = (c.join(e.filter(F.col("event_type") == "purchase")
-                .select("user_id", F.col("ts").alias("t1")), "user_id")
-         .filter(F.col("t1") > F.col("t0"))
-         .groupBy("user_id", "t0").agg(F.min("t1").alias("t1"))
-         .select(F.expr("unix_micros(cast(t1 as timestamp)) div 1000000"
-                        " - unix_micros(cast(t0 as timestamp)) div 1000000")
-                 .cast("long").alias("secs")))
-    nclick = c.agg(F.count(F.lit(1)).alias("n_clickers"))
-    ranked = (p.select("secs",
-                       F.row_number().over(Window.orderBy("secs"))
-                       .alias("rn"))
-              .withColumn("n", F.count(F.lit(1)).over(
-                  Window.rowsBetween(Window.unboundedPreceding,
-                                     Window.unboundedFollowing))))
-
-    def disc(pq):
-        return F.min(F.when(F.col("rn") >= F.ceil(F.lit(pq) * F.col("n")),
-                            F.col("secs")))
-
-    agg = ranked.agg(
-        F.count(F.lit(1)).cast("long").alias("n_converted"),
-        disc(0.25).cast("long").alias("p25_secs"),
-        disc(0.5).cast("long").alias("p50_secs"),
-        disc(0.75).cast("long").alias("p75_secs"),
-        disc(0.9).cast("long").alias("p90_secs"))
-    return (agg.crossJoin(F.broadcast(nclick))
-            .select(F.col("n_clickers").cast("long").alias("n_clickers"),
-                    "n_converted",
-                    F.expr("CAST(n_converted * 1000000 div n_clickers"
-                           " AS BIGINT)").alias("conversion_e6"),
-                    "p25_secs", "p50_secs", "p75_secs", "p90_secs"))
-
-
-_JACKKNIFE_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS HUGEINT) AS x
-  FROM events GROUP BY 1
-), s AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx FROM daily
-), dev AS (
-  SELECT s.n, s.sx,
-         sum((s.sx - s.n * daily.x) * (s.sx - s.n * daily.x)) AS ssq
-  FROM daily CROSS JOIN s GROUP BY s.n, s.sx
-)
-SELECT CAST(n AS BIGINT) AS n_days,
-       CAST(sx * 1000000 // n AS BIGINT) AS mean_e6,
-       CAST(ssq AS BIGINT) AS ssq,
-       CAST(ssq * 1000000 // (n * n * n * (n - 1)) AS BIGINT) AS var_jack_e6,
-       round(sqrt(CAST(ssq AS DOUBLE)
-                  / CAST(n * n * n * (n - 1) AS DOUBLE)), 6) AS se_jack
-FROM dev
-"""
-
-
-@register("q_events_jackknife_se", _JACKKNIFE_SQL)
-def q_events_jackknife_se(spark, sf_dir):
-    """Jackknife standard error of the mean daily volume — the
-    leave-one-out companion to q_events_bootstrap_ci, collapsed to closed
-    form: θᵢ−θ̄ = (S−n·xᵢ)/(n(n−1)), so var_jack = Σ(S−n·xᵢ)²/(n³(n−1))
-    with the sum of squared integer deviations EXACT (no float mean ever
-    forms) and one final sqrt on an identical double (IEEE sqrt is
-    correctly rounded, unlike ln, so no cross-engine risk). One daily
-    aggregate + one broadcast of (n, S); deviations are map-side."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("x")))
-    s = daily.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-                  F.sum("x").alias("sx"))
-    dev = (daily.crossJoin(F.broadcast(s))
-           .groupBy("n", "sx")
-           .agg(F.sum(F.expr("(sx - n * x) * (sx - n * x)")).alias("ssq")))
-    return dev.select(
-        F.col("n").cast("long").alias("n_days"),
-        F.expr("CAST(sx * 1000000 div n AS BIGINT)").alias("mean_e6"),
-        F.col("ssq").cast("long").alias("ssq"),
-        F.expr("CAST(ssq * 1000000 div (n * n * n * (n - 1)) AS BIGINT)")
-        .alias("var_jack_e6"),
-        F.round(F.sqrt(F.col("ssq").cast("double")
-                       / F.expr("CAST(n * n * n * (n - 1) AS DOUBLE)")), 6)
-        .alias("se_jack"))
-
-
-_COLUMN_PROFILE_SQL = """
-WITH stacked AS (
-  SELECT 'event_type' AS col, event_type AS v FROM events
-  UNION ALL SELECT 'user_id', CAST(user_id AS VARCHAR) FROM events
-  UNION ALL SELECT 'value_cents',
-    CAST(CAST(floor("value" * 100 + 0.5) AS BIGINT) AS VARCHAR) FROM events
-  UNION ALL SELECT 'props', props FROM events
-), per_col AS (
-  SELECT col, CAST(count(*) AS BIGINT) AS n,
-         CAST(count(*) - count(v) AS BIGINT) AS n_null,
-         CAST(count(DISTINCT v) AS BIGINT) AS n_distinct
-  FROM stacked GROUP BY 1
-), tops AS (
-  SELECT col, v AS top_value, CAST(c AS BIGINT) AS top_count
-  FROM (SELECT col, v, count(*) AS c,
-               row_number() OVER (PARTITION BY col
-                                  ORDER BY count(*) DESC, v) AS rn
-        FROM stacked WHERE v IS NOT NULL GROUP BY col, v)
-  WHERE rn = 1
-)
-SELECT p.col AS column_name, p.n, p.n_null, p.n_distinct,
-       t.top_value, t.top_count,
-       CAST(t.top_count * 1000000 // p.n AS BIGINT) AS top_share_e6
-FROM per_col p JOIN tops t ON t.col = p.col
-"""
-
-
-@register("q_events_column_profile", _COLUMN_PROFILE_SQL)
-def q_events_column_profile(spark, sf_dir):
-    """Generic column profiler — the schema-inspection report a data
-    catalog materializes per table: for every column, row/null/distinct
-    counts plus the modal value and its share (skew early-warning: a
-    top_share near 10⁶ means a constant column or a hot key). Columns
-    unify through a typed-to-string stack — floats via the exact cents
-    mapping, never engine-dependent float formatting. Spark does the
-    stack with ONE scan (stack() expression), not one pass per column;
-    the profile is two aggregates over (col, v)."""
-    e = _t(spark, sf_dir, "events")
-    stacked = e.select(F.expr(
-        "stack(4, 'event_type', event_type,"
-        " 'user_id', CAST(user_id AS STRING),"
-        " 'value_cents',"
-        " CAST(CAST(floor(value * 100 + 0.5) AS BIGINT) AS STRING),"
-        " 'props', props) AS (col, v)"))
-    per_col = stacked.groupBy("col").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        (F.count(F.lit(1)) - F.count("v")).cast("long").alias("n_null"),
-        F.countDistinct("v").cast("long").alias("n_distinct"))
-    g = (stacked.filter(F.col("v").isNotNull())
-         .groupBy("col", "v").agg(F.count(F.lit(1)).alias("c")))
-    wt = Window.partitionBy("col").orderBy(F.col("c").desc(), "v")
-    tops = (g.withColumn("rn", F.row_number().over(wt))
-            .filter(F.col("rn") == 1)
-            .select("col", F.col("v").alias("top_value"),
-                    F.col("c").cast("long").alias("top_count")))
-    return (per_col.join(tops, "col")
-            .select(F.col("col").alias("column_name"), "n", "n_null",
-                    "n_distinct", "top_value", "top_count",
-                    F.expr("CAST(top_count * 1000000 div n AS BIGINT)")
-                    .alias("top_share_e6")))
-
-
-_FEATURE_SNAPSHOT_SQL = """
-WITH ref AS (SELECT max(ts) AS rt FROM events),
-f AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n_total,
-         CAST(count(*) FILTER (WHERE ts > rt - INTERVAL 7 DAY) AS BIGINT)
-             AS n_7d,
-         CAST(count(*) FILTER (WHERE ts > rt - INTERVAL 30 DAY) AS BIGINT)
-             AS n_30d,
-         CAST(count(DISTINCT event_type)
-              FILTER (WHERE ts > rt - INTERVAL 30 DAY) AS BIGINT)
-             AS n_types_30d,
-         CAST(sum(CAST(floor("value" * 100 + 0.5) AS BIGINT))
-              FILTER (WHERE ts > rt - INTERVAL 30 DAY) AS BIGINT)
-             AS spend_30d_cents,
-         CAST(epoch_us(max(rt)) // 1000000
-              - epoch_us(max(ts)) // 1000000 AS BIGINT) AS secs_since_last
-  FROM events CROSS JOIN ref GROUP BY user_id
-)
-SELECT user_id, n_total, n_7d, n_30d, n_types_30d,
-       coalesce(spend_30d_cents, 0) AS spend_30d_cents, secs_since_last
-FROM f
-"""
-
-
-@register("q_events_feature_snapshot", _FEATURE_SNAPSHOT_SQL)
-def q_events_feature_snapshot(spark, sf_dir):
-    """Feature-store snapshot: the as-of-reference-time per-user feature
-    vector an ML training job joins on (recency / frequency windows,
-    breadth, windowed spend in exact cents, seconds-since-last) — every
-    feature computed in ONE pass as conditional aggregates against the
-    broadcast reference timestamp, never one scan per window (the
-    data_filter_funnel discipline; at 100 TB, 6 windows × 1 scan vs 6
-    scans is the job's cost). Reference time = max(ts), so the snapshot
-    is deterministic with no wall-clock dependence."""
-    e = _t(spark, sf_dir, "events")
-    ref = e.agg(F.max("ts").alias("rt"))
-    in7 = F.col("ts") > F.col("rt") - F.expr("INTERVAL 7 DAY")
-    in30 = F.col("ts") > F.col("rt") - F.expr("INTERVAL 30 DAY")
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-    return (e.crossJoin(F.broadcast(ref))
-            .groupBy("user_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_total"),
-                 F.sum(in7.cast("long")).cast("long").alias("n_7d"),
-                 F.sum(in30.cast("long")).cast("long").alias("n_30d"),
-                 F.countDistinct(F.when(in30, F.col("event_type")))
-                 .cast("long").alias("n_types_30d"),
-                 F.coalesce(F.sum(F.when(in30, cents)), F.lit(0))
-                 .cast("long").alias("spend_30d_cents"),
-                 (F.expr("unix_micros(cast(max(rt) as timestamp))"
-                         " div 1000000")
-                  - F.expr("unix_micros(cast(max(ts) as timestamp))"
-                           " div 1000000"))
-                 .cast("long").alias("secs_since_last")))
-
-
-_PADDING_WASTE_SQL = """
-WITH t AS (
-  SELECT len(list_filter(string_split(text, ' '), w -> w <> '')) AS tok
-  FROM documents
-), b AS (
-  SELECT least(tok // 128, 8) AS bucket, CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(tok) AS BIGINT) AS total_tokens,
-         CAST(sum(((tok + 511) // 512) * 512) AS BIGINT) AS padded_tokens
-  FROM t WHERE tok > 0 GROUP BY 1
-)
-SELECT CAST(bucket AS INTEGER) AS bucket, n_docs, total_tokens,
-       padded_tokens,
-       CAST((padded_tokens - total_tokens) * 1000000 // padded_tokens
-            AS BIGINT) AS waste_e6
-FROM b
-"""
-
-
-@register("data_padding_waste", _PADDING_WASTE_SQL)
-def data_padding_waste(spark, sf_dir):
-    """Padding-waste audit for fixed-length (512) training batches: per
-    document-length bucket, real tokens vs pad-to-multiple-of-512 tokens
-    and the wasted fraction (exact e6) — the number that justifies
-    sequence packing (operators/packing.pack_sequences removes exactly
-    this waste; this query quantifies what naive padding would burn).
-    One scan, one small aggregate."""
-    d = _t(spark, sf_dir, "documents")
-    tok = F.size(F.filter(F.split("text", " "), lambda w: w != ""))
-    t = d.select(tok.alias("tok")).filter(F.col("tok") > 0)
-    b = (t.groupBy(F.least(F.expr("tok div 128"), F.lit(8))
-                   .cast("int").alias("bucket"))
-         .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-              F.sum("tok").cast("long").alias("total_tokens"),
-              F.sum(F.expr("((tok + 511) div 512) * 512")).cast("long")
-              .alias("padded_tokens")))
-    return b.select(
-        "bucket", "n_docs", "total_tokens", "padded_tokens",
-        F.expr("CAST((padded_tokens - total_tokens) * 1000000"
-               " div padded_tokens AS BIGINT)").alias("waste_e6"))
-
-
-_TOKEN_ENTROPY_SQL = """
-WITH tok AS (
-  SELECT source, t AS tok, CAST(count(*) AS BIGINT) AS c
-  FROM (SELECT source, unnest(string_split(text, ' ')) AS t
-        FROM documents)
-  WHERE t <> '' GROUP BY 1, 2
-), tot AS (
-  SELECT source, sum(c) AS n, count(*) AS vocab FROM tok GROUP BY 1
-)
-SELECT tok.source, CAST(tot.n AS BIGINT) AS n_tokens,
-       CAST(tot.vocab AS BIGINT) AS vocab,
-       round(-sum((CAST(tok.c AS DOUBLE) / tot.n)
-                  * ln(CAST(tok.c AS DOUBLE) / tot.n)), 6) AS entropy_nats,
-       round(-sum((CAST(tok.c AS DOUBLE) / tot.n)
-                  * ln(CAST(tok.c AS DOUBLE) / tot.n))
-             / ln(CAST(tot.vocab AS DOUBLE)), 6) AS norm_entropy
-FROM tok JOIN tot USING (source)
-GROUP BY tok.source, tot.n, tot.vocab
-"""
-
-
-@register("text_token_entropy", _TOKEN_ENTROPY_SQL)
-def text_token_entropy(spark, sf_dir):
-    """Per-source token-distribution Shannon entropy (and its
-    vocab-normalized form) — the diversity signal that separates
-    template/boilerplate sources (low H) from natural text, complementary
-    to TTR (text_lexical_diversity measures breadth; entropy measures the
-    SHAPE of reuse). Probabilities are exact rationals c/n evaluated on
-    identical doubles; Σp·ln p is rounded to 6 dp (the
-    q_events_entropy_rate float-log discipline). One token aggregate,
-    vocabulary-bounded join."""
-    d = _t(spark, sf_dir, "documents")
-    tok = (d.select("source", F.explode(F.split("text", " ")).alias("t"))
-           .filter(F.col("t") != "")
-           .groupBy("source", "t")
-           .agg(F.count(F.lit(1)).cast("long").alias("c")))
-    tot = tok.groupBy("source").agg(F.sum("c").alias("n"),
-                                    F.count(F.lit(1)).alias("vocab"))
-    p = F.col("c").cast("double") / F.col("n")
-    return (tok.join(F.broadcast(tot), "source")
-            .groupBy("source", "n", "vocab")
-            .agg(F.round(-F.sum(p * F.log(p)), 6).alias("entropy_nats"),
-                 F.round(-F.sum(p * F.log(p))
-                         / F.log(F.col("vocab").cast("double")), 6)
-                 .alias("norm_entropy"))
-            .select("source", F.col("n").cast("long").alias("n_tokens"),
-                    F.col("vocab").cast("long").alias("vocab"),
-                    "entropy_nats", "norm_entropy"))
-
-
-_POWERLAW_SQL = """
-WITH u AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS c FROM events GROUP BY 1
-), r AS (
-  SELECT CAST(floor(ln(CAST(row_number() OVER (ORDER BY c DESC, user_id)
-                            AS DOUBLE)) * 1000000 + 0.5) AS HUGEINT) AS x,
-         CAST(floor(ln(CAST(c AS DOUBLE)) * 1000000 + 0.5) AS HUGEINT) AS y
-  FROM u
-), s AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy,
-         sum(x * y) AS sxy, sum(x * x) AS sxx, sum(y * y) AS syy
-  FROM r
-), t AS (
-  SELECT n, n * sxy - sx * sy AS num, n * sxx - sx * sx AS vx,
-         n * syy - sy * sy AS vy
-  FROM s
-)
-SELECT CAST(n AS BIGINT) AS n_users,
-       CAST(num * 1000000000 // vx AS BIGINT) AS slope_e9,
-       CAST(CASE WHEN vy > 0 THEN
-            ((num * 1000000000 // vx) * (num * 1000000000 // vy))
-            // 1000000000000 ELSE 1000000 END AS BIGINT) AS r2_e6
-FROM t
-"""
-
-
-@register("q_events_powerlaw_fit", _POWERLAW_SQL)
-def q_events_powerlaw_fit(spark, sf_dir):
-    """Heavy-tail diagnostic: log-log OLS of user-activity rank vs count
-    (Zipf/power-law exponent ≈ −slope) — the number that decides whether
-    a key distribution needs salting before it needs a bigger cluster.
-    Each ln is taken once per point and IMMEDIATELY fixed to an e6
-    integer (floor(ln·10⁶+0.5)), so all five regression sums are exact
-    integer arithmetic — no order-dependent float summation ever forms
-    (the one float-sum risk the e6-late queries avoid by construction).
-    The rank window runs over per-user AGGREGATES."""
-    e = _t(spark, sf_dir, "events")
-    u = e.groupBy("user_id").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    rn = F.row_number().over(Window.orderBy(F.col("c").desc(), "user_id"))
-    r = u.select(
-        F.floor(F.log(rn.cast("double")) * 1000000 + F.lit(0.5))
-        .cast("decimal(38,0)").alias("x"),
-        F.floor(F.log(F.col("c").cast("double")) * 1000000 + F.lit(0.5))
-        .cast("decimal(38,0)").alias("y"))
-    s = r.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-              F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-              F.sum(F.col("x") * F.col("y")).alias("sxy"),
-              F.sum(F.col("x") * F.col("x")).alias("sxx"),
-              F.sum(F.col("y") * F.col("y")).alias("syy"))
-    t = s.select("n",
-                 (F.col("n") * F.col("sxy")
-                  - F.col("sx") * F.col("sy")).alias("num"),
-                 (F.col("n") * F.col("sxx")
-                  - F.col("sx") * F.col("sx")).alias("vx"),
-                 (F.col("n") * F.col("syy")
-                  - F.col("sy") * F.col("sy")).alias("vy"))
-    return t.select(
-        F.col("n").cast("long").alias("n_users"),
-        F.expr("CAST(num * 1000000000 div vx AS BIGINT)").alias("slope_e9"),
-        F.expr("CAST(CASE WHEN vy > 0 THEN"
-               " ((num * 1000000000 div vx) * (num * 1000000000 div vy))"
-               " div 1000000000000 ELSE 1000000 END AS BIGINT)")
-        .alias("r2_e6"))
-
-
-_SUPPLIER_RISK_SQL = """
-WITH j AS (
-  SELECT l.l_suppkey,
-         datediff('day', o.o_orderdate, CAST(l.l_shipdate AS DATE)) AS lag,
-         CAST(floor(l.l_extendedprice * 100 + 0.5) AS HUGEINT) AS cents
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-), s AS (
-  SELECT l_suppkey, CAST(count(*) AS HUGEINT) AS n_lines,
-         CAST(sum(CASE WHEN lag > 100 THEN 1 ELSE 0 END) AS HUGEINT)
-             AS n_late,
-         sum(CASE WHEN lag > 100 THEN cents ELSE 0 END) AS late_cents,
-         sum(CAST(lag AS HUGEINT)) AS sum_lag
-  FROM j GROUP BY 1 HAVING count(*) >= 50
-), ranked AS (
-  SELECT l_suppkey, n_lines, n_late,
-         n_late * 1000000 // n_lines AS late_rate_e6,
-         late_cents, sum_lag * 1000000 // n_lines AS avg_lag_e6,
-         row_number() OVER (ORDER BY n_late * 1000000 // n_lines DESC,
-                            l_suppkey) AS rank
-  FROM s
-)
-SELECT CAST(rank AS INTEGER) AS rank, l_suppkey AS suppkey,
-       CAST(n_lines AS BIGINT) AS n_lines, CAST(n_late AS BIGINT) AS n_late,
-       CAST(late_rate_e6 AS BIGINT) AS late_rate_e6,
-       round(CAST(late_cents AS DOUBLE) / 100, 2) AS late_revenue,
-       CAST(avg_lag_e6 AS BIGINT) AS avg_lag_days_e6
-FROM ranked WHERE rank <= 20
-"""
-
-
-@register("q_supplier_risk_rank", _SUPPLIER_RISK_SQL)
-def q_supplier_risk_rank(spark, sf_dir):
-    """Supplier delivery-risk ranking: per supplier with ≥50 lines, the
-    late-shipment rate (order→ship lag > 100 days), exact e6, with
-    revenue-at-risk and mean lag — the procurement watchlist query. One
-    equi-join on orderkey (lineitem's natural key), one supplier
-    aggregate, top-20 via rank window over per-supplier AGGREGATES (never
-    raw lines)."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    j = (l.join(o, o.o_orderkey == l.l_orderkey)
-         .select("l_suppkey",
-                 F.datediff(F.col("l_shipdate").cast("date"),
-                            F.col("o_orderdate")).alias("lag"),
-                 F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-                 .cast("decimal(38,0)").alias("cents")))
-    late = F.col("lag") > 100
-    s = (j.groupBy("l_suppkey")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n_lines"),
-              F.sum(late.cast("int")).cast("decimal(38,0)").alias("n_late"),
-              F.sum(F.when(late, F.col("cents")).otherwise(0))
-              .alias("late_cents"),
-              F.sum(F.col("lag").cast("decimal(38,0)")).alias("sum_lag"))
-         .filter(F.col("n_lines") >= 50)
-         .withColumn("late_rate_e6",
-                     F.expr("n_late * 1000000 div n_lines")))
-    w = Window.orderBy(F.col("late_rate_e6").desc(), "l_suppkey")
-    return (s.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 20)
-            .select(F.col("rank").cast("int").alias("rank"),
-                    F.col("l_suppkey").alias("suppkey"),
-                    F.col("n_lines").cast("long").alias("n_lines"),
-                    F.col("n_late").cast("long").alias("n_late"),
-                    F.col("late_rate_e6").cast("long").alias("late_rate_e6"),
-                    F.round(F.col("late_cents").cast("double") / 100, 2)
-                    .alias("late_revenue"),
-                    F.expr("CAST(sum_lag * 1000000 div n_lines AS BIGINT)")
-                    .alias("avg_lag_days_e6")))
-
-
-_LANG_CONFUSION_SQL = r"""
-WITH scored AS (
-  SELECT lang,
-    len(list_intersect(string_split_regex(lower(text), '\s+'),
-        ['the','and','of','to','is'])) AS s_en,
-    len(list_intersect(string_split_regex(lower(text), '\s+'),
-        ['el','la','de','que','los'])) AS s_es,
-    len(list_intersect(string_split_regex(lower(text), '\s+'),
-        ['le','la','les','des','est'])) AS s_fr,
-    len(list_intersect(string_split_regex(lower(text), '\s+'),
-        ['der','die','und','das','ist'])) AS s_de,
-    regexp_matches(text, '[一-鿿]') AS has_cjk
-  FROM documents
-), pred AS (
-  SELECT lang AS actual,
-    CASE WHEN has_cjk THEN 'zh'
-         WHEN greatest(s_en, s_es, s_fr, s_de) > 0
-              AND s_en = greatest(s_en, s_es, s_fr, s_de) THEN 'en'
-         WHEN greatest(s_en, s_es, s_fr, s_de) > 0
-              AND s_es = greatest(s_en, s_es, s_fr, s_de) THEN 'es'
-         WHEN greatest(s_en, s_es, s_fr, s_de) > 0
-              AND s_fr = greatest(s_en, s_es, s_fr, s_de) THEN 'fr'
-         WHEN greatest(s_en, s_es, s_fr, s_de) > 0
-              AND s_de = greatest(s_en, s_es, s_fr, s_de) THEN 'de'
-         ELSE 'en' END AS predicted
-  FROM scored
-), cm AS (
-  SELECT actual, predicted, CAST(count(*) AS BIGINT) AS n
-  FROM pred GROUP BY 1, 2
-), rt AS (SELECT actual, sum(n) AS row_total FROM cm GROUP BY 1)
-SELECT cm.actual, cm.predicted, cm.n,
-       CAST(rt.row_total AS BIGINT) AS row_total,
-       CAST(cm.n * 1000000 // rt.row_total AS BIGINT) AS rate_e6
-FROM cm JOIN rt USING (actual)
-"""
-
-
-@register("text_lang_confusion", _LANG_CONFUSION_SQL)
-def text_lang_confusion(spark, sf_dir):
-    """Classifier-evaluation confusion matrix for the stopword lang-ID
-    heuristic (functions/text.lang_id) against the corpus's ground-truth
-    lang column — per (actual, predicted) cell counts and the per-class
-    rate (diagonal = recall), exact e6. The eval every quality gate needs
-    before trusting a filter: text_lang_quality APPLIES the classifier,
-    this query MEASURES it. One map-side scoring pass + a |langs|² cell
-    aggregate."""
-    from .functions.text import lang_id
-    d = _t(spark, sf_dir, "documents")
-    pred = d.select(F.col("lang").alias("actual"),
-                    lang_id(F.col("text")).alias("predicted"))
-    cm = pred.groupBy("actual", "predicted").agg(
-        F.count(F.lit(1)).cast("long").alias("n"))
-    rt = cm.groupBy("actual").agg(F.sum("n").alias("row_total"))
-    return (cm.join(F.broadcast(rt), "actual")
-            .select("actual", "predicted", "n",
-                    F.col("row_total").cast("long").alias("row_total"),
-                    F.expr("CAST(n * 1000000 div row_total AS BIGINT)")
-                    .alias("rate_e6")))
-
-
-_FORECAST_BACKTEST_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS HUGEINT) AS c
-  FROM events GROUP BY 1
-), j AS (
-  SELECT a.d, a.c AS actual, p.c AS pred
-  FROM daily a JOIN daily p ON p.d = a.d - 7
-), m AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(abs(actual - pred)) AS sae,
-         sum(actual - pred) AS sbias,
-         sum(abs(actual - pred) * 1000000 // actual) AS sape_e6
-  FROM j
-)
-SELECT CAST(n AS BIGINT) AS n_days,
-       CAST(sae * 1000000 // n AS BIGINT) AS mae_e6,
-       CAST(sbias * 1000000 // CAST(n AS BIGINT) AS BIGINT) AS bias_e6,
-       CAST(sape_e6 // n AS BIGINT) AS mape_e6
-FROM m
-"""
-
-
-@register("q_events_forecast_backtest", _FORECAST_BACKTEST_SQL)
-def q_events_forecast_backtest(spark, sf_dir):
-    """Forecast-accuracy backtest of the seasonal-naive baseline (predict
-    today = same weekday last week) on daily volume: MAE, bias, and MAPE
-    as exact integers (per-day APE floors to e6 BEFORE averaging, the
-    only order-free way to aggregate a ratio). The baseline every real
-    forecaster must beat — publishing model error without this number is
-    meaningless. One daily aggregate + one self-equi-join on shifted
-    day."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("c")))
-    p = daily.select(F.date_add("d", 7).alias("d"), F.col("c").alias("pred"))
-    j = daily.join(p, "d").select(F.col("c").alias("actual"), "pred")
-    m = j.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-              F.sum(F.abs(F.col("actual") - F.col("pred"))).alias("sae"),
-              F.sum(F.col("actual") - F.col("pred")).alias("sbias"),
-              F.sum(F.expr("abs(actual - pred) * 1000000 div actual"))
-              .alias("sape_e6"))
-    return m.select(
-        F.col("n").cast("long").alias("n_days"),
-        F.expr("CAST(sae * 1000000 div n AS BIGINT)").alias("mae_e6"),
-        F.expr("CAST(sbias * 1000000 div n AS BIGINT)").alias("bias_e6"),
-        F.expr("CAST(sape_e6 div n AS BIGINT)").alias("mape_e6"))
-
-
-_TS_CV_SQL = """
-WITH days AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1
-), lab AS (
-  SELECT d, c,
-         (row_number() OVER (ORDER BY d) - 1) * 5
-           / count(*) OVER () AS fold
-  FROM days
-), f AS (SELECT CAST(floor(fold) AS INTEGER) AS fold, d, c FROM lab)
-SELECT k.fold,
-       CAST(sum(CASE WHEN f.fold < k.fold THEN 1 ELSE 0 END) AS BIGINT)
-           AS train_days,
-       CAST(sum(CASE WHEN f.fold = k.fold THEN 1 ELSE 0 END) AS BIGINT)
-           AS test_days,
-       CAST(sum(CASE WHEN f.fold < k.fold THEN f.c ELSE 0 END) AS BIGINT)
-           AS n_train,
-       CAST(sum(CASE WHEN f.fold = k.fold THEN f.c ELSE 0 END) AS BIGINT)
-           AS n_test
-FROM (SELECT CAST(unnest([1, 2, 3, 4]) AS INTEGER) AS fold) k
-CROSS JOIN f
-GROUP BY k.fold
-"""
-
-
-@register("q_events_ts_cv_folds", _TS_CV_SQL)
-def q_events_ts_cv_folds(spark, sf_dir):
-    """Rolling-origin (expanding-window) cross-validation manifest for
-    time-series models: the day span splits into 5 equal chronological
-    blocks; fold k trains on blocks < k and tests on block k — never the
-    leakage-prone random split (data_leakage_safe_split handles entity
-    leakage; this handles TEMPORAL leakage). Output is the fold manifest
-    (days + event counts per side) a backtest driver iterates. One daily
-    aggregate, a rank window over DAYS, and a 4-row broadcast cross
-    join."""
-    e = _t(spark, sf_dir, "events")
-    days = (e.groupBy(F.col("ts").cast("date").alias("d"))
-            .agg(F.count(F.lit(1)).cast("long").alias("c")))
-    lab = days.select(
-        "d", "c",
-        F.floor((F.row_number().over(Window.orderBy("d")) - 1) * 5
-                / F.count(F.lit(1)).over(
-                    Window.rowsBetween(Window.unboundedPreceding,
-                                       Window.unboundedFollowing)))
-        .cast("int").alias("fold"))
-    k = spark.range(1, 5).select(F.col("id").cast("int").alias("k"))
-    return (F.broadcast(k).crossJoin(lab)
-            .groupBy(F.col("k").alias("fold"))
-            .agg(F.sum((F.col("fold") < F.col("k")).cast("int"))
-                 .cast("long").alias("train_days"),
-                 F.sum((F.col("fold") == F.col("k")).cast("int"))
-                 .cast("long").alias("test_days"),
-                 F.sum(F.when(F.col("fold") < F.col("k"), F.col("c"))
-                       .otherwise(0)).cast("long").alias("n_train"),
-                 F.sum(F.when(F.col("fold") == F.col("k"), F.col("c"))
-                       .otherwise(0)).cast("long").alias("n_test")))
-
-
-_ABC_SQL = """
-WITH rev AS (
-  SELECT l_partkey,
-         CAST(sum(CAST(floor(l_extendedprice * 100 + 0.5) AS HUGEINT))
-              AS HUGEINT) AS cents
-  FROM lineitem GROUP BY 1
-), cum AS (
-  SELECT l_partkey, cents,
-         sum(cents) OVER (ORDER BY cents DESC, l_partkey) AS cum_cents,
-         sum(cents) OVER () AS total
-  FROM rev
-), cls AS (
-  SELECT CASE WHEN (cum_cents - cents) * 100 < total * 80 THEN 'A'
-              WHEN (cum_cents - cents) * 100 < total * 95 THEN 'B'
-              ELSE 'C' END AS abc_class,
-         cents, total
-  FROM cum
-)
-SELECT abc_class, CAST(count(*) AS BIGINT) AS n_parts,
-       round(CAST(sum(cents) AS DOUBLE) / 100, 2) AS revenue,
-       CAST(sum(cents) * 1000000 // max(total) AS BIGINT) AS share_e6
-FROM cls GROUP BY 1
-"""
-
-
-@register("q_parts_abc_classification", _ABC_SQL)
-def q_parts_abc_classification(spark, sf_dir):
-    """ABC inventory classification: parts ranked by revenue, class A =
-    parts entering before the 80% cumulative-revenue line, B before 95%,
-    C the tail (boundary test on the PRE-item cumulative — the item that
-    crosses the line still belongs to the class it started in, exact
-    integer cross-multiplication, no float shares). The cumulative
-    window runs over per-part AGGREGATES; a 10⁹-part catalog would take
-    the two-phase bucketed running sum (the text_domain_budget plan), as
-    noted there."""
-    l = _t(spark, sf_dir, "lineitem")
-    rev = (l.groupBy("l_partkey")
-           .agg(F.sum(F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-                      .cast("decimal(38,0)")).alias("cents")))
-    wc = (Window.orderBy(F.col("cents").desc(), "l_partkey")
-          .rowsBetween(Window.unboundedPreceding, 0))
-    wall = Window.rowsBetween(Window.unboundedPreceding,
-                              Window.unboundedFollowing)
-    cum = rev.select(
-        "cents", F.sum("cents").over(wc).alias("cum_cents"),
-        F.sum("cents").over(wall).alias("total"))
-    cls = cum.select(
-        F.when(F.expr("(cum_cents - cents) * 100 < total * 80"), "A")
-        .when(F.expr("(cum_cents - cents) * 100 < total * 95"), "B")
-        .otherwise("C").alias("abc_class"), "cents", "total")
-    return (cls.groupBy("abc_class")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_parts"),
-                 F.round(F.sum("cents").cast("double") / 100, 2)
-                 .alias("revenue"),
-                 F.expr("CAST(sum(cents) * 1000000 div max(total) AS BIGINT)")
-                 .alias("share_e6")))
-
-
-_POWER_Z_A = repr(1.959963984540054)   # z_{0.975} (two-sided alpha 0.05)
-_POWER_Z_B = repr(0.8416212335729143)  # z_{0.80}  (power 0.80)
-
-_POWER_SQL = f"""
-WITH base AS (
-  SELECT CAST(count(*) FILTER (WHERE event_type = 'purchase')
-              AS HUGEINT) AS conv,
-         CAST(count(*) AS HUGEINT) AS users
-  FROM events
-), d AS (
-  SELECT CAST(unnest([50000, 100000, 200000, 500000]) AS BIGINT) AS lift_e6
-), x AS (
-  SELECT d.lift_e6,
-         CAST(base.conv AS DOUBLE) / base.users AS p1,
-         (CAST(base.conv AS DOUBLE) / base.users)
-           * (1.0 + CAST(d.lift_e6 AS DOUBLE) / 1000000.0) AS p2,
-         base.conv, base.users
-  FROM base CROSS JOIN d
-)
-SELECT lift_e6, CAST(conv * 1000000 // users AS BIGINT) AS p1_e6,
-       CAST(floor(p2 * 1000000 + 0.5) AS BIGINT) AS p2_e6,
-       CAST(ceil(
-         (({_POWER_Z_A} * sqrt(2.0 * ((p1 + p2) / 2.0)
-                               * (1.0 - (p1 + p2) / 2.0)))
-          + ({_POWER_Z_B} * sqrt((p1 * (1.0 - p1)) + (p2 * (1.0 - p2)))))
-         * (({_POWER_Z_A} * sqrt(2.0 * ((p1 + p2) / 2.0)
-                                 * (1.0 - (p1 + p2) / 2.0)))
-            + ({_POWER_Z_B} * sqrt((p1 * (1.0 - p1)) + (p2 * (1.0 - p2)))))
-         / ((p2 - p1) * (p2 - p1))) AS BIGINT) AS n_per_arm
-FROM x
-"""
-
-
-@register("q_events_power_analysis", _POWER_SQL)
-def q_events_power_analysis(spark, sf_dir):
-    """Experiment sample-size calculator seeded from observed data: for
-    relative lifts of 5/10/20/50% on the purchase-event rate, the
-    observations-per-arm needed at α=0.05 (two-sided) / power 0.80 by the
-    standard two-proportion normal-approximation formula — what
-    q_events_abtest_lift's readout needs to be trusted. The z constants are embedded as repr() literals
-    (the BM25-oracle technique); p1 derives from exact integers, every
-    float expression is parenthesized identically on both engines, and
-    sqrt/division are IEEE-exact, so ceil() lands on the same integer.
-    One two-column scan aggregate + a 4-row literal cross join."""
-    e = _t(spark, sf_dir, "events")
-    base = e.agg(
-        F.sum((F.col("event_type") == "purchase").cast("int"))
-        .cast("decimal(38,0)").alias("conv"),
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("users"))
-    d = (spark.range(0, 4)
-         .select(F.element_at(F.array(F.lit(50000), F.lit(100000),
-                                      F.lit(200000), F.lit(500000)),
-                              (F.col("id") + 1).cast("int"))
-                 .cast("long").alias("lift_e6")))
-    x = (base.crossJoin(F.broadcast(d))
-         .withColumn("p1", F.expr("CAST(conv AS DOUBLE) / users"))
-         .withColumn("p2", F.expr("(CAST(conv AS DOUBLE) / users)"
-                                  " * (1.0 + CAST(lift_e6 AS DOUBLE)"
-                                  " / 1000000.0)")))
-    za, zb = _POWER_Z_A, _POWER_Z_B
-    nexpr = (f"CAST(ceil((({za} * sqrt(2.0 * ((p1 + p2) / 2.0)"
-             f" * (1.0 - (p1 + p2) / 2.0)))"
-             f" + ({zb} * sqrt((p1 * (1.0 - p1)) + (p2 * (1.0 - p2)))))"
-             f" * (({za} * sqrt(2.0 * ((p1 + p2) / 2.0)"
-             f" * (1.0 - (p1 + p2) / 2.0)))"
-             f" + ({zb} * sqrt((p1 * (1.0 - p1)) + (p2 * (1.0 - p2)))))"
-             f" / ((p2 - p1) * (p2 - p1))) AS BIGINT)")
-    return x.select(
-        "lift_e6",
-        F.expr("CAST(conv * 1000000 div users AS BIGINT)").alias("p1_e6"),
-        F.expr("CAST(floor(p2 * 1000000 + 0.5) AS BIGINT)").alias("p2_e6"),
-        F.expr(nexpr).alias("n_per_arm"))
-
-
-_COPURCHASE_SQL = """
-WITH cp AS (
-  SELECT DISTINCT o.o_custkey AS cust, l.l_partkey AS part
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-), np AS (SELECT part, CAST(count(*) AS HUGEINT) AS n FROM cp GROUP BY 1),
-pairs AS (
-  SELECT a.part AS pa, b.part AS pb, CAST(count(*) AS HUGEINT) AS common
-  FROM cp a JOIN cp b ON b.cust = a.cust AND a.part < b.part
-  GROUP BY 1, 2 HAVING count(*) >= 3
-), sym AS (
-  SELECT pa AS part, pb AS neighbor, common FROM pairs
-  UNION ALL SELECT pb, pa, common FROM pairs
-), scored AS (
-  SELECT s.part, s.neighbor, CAST(s.common AS BIGINT) AS common_customers,
-         CAST(s.common * 1000000 // (na.n + nb.n - s.common) AS BIGINT)
-             AS jaccard_e6
-  FROM sym s JOIN np na ON na.part = s.part
-  JOIN np nb ON nb.part = s.neighbor
-)
-SELECT part, neighbor, common_customers, jaccard_e6,
-       CAST(rank AS INTEGER) AS rank
-FROM (SELECT *, row_number() OVER (PARTITION BY part
-          ORDER BY jaccard_e6 DESC, neighbor) AS rank FROM scored)
-WHERE rank <= 5
-"""
-
-
-@register("q_parts_copurchase_similarity", _COPURCHASE_SQL)
-def q_parts_copurchase_similarity(spark, sf_dir):
-    """Item-item collaborative filtering: per part, the top-5 most
-    co-purchased neighbors by exact customer-set Jaccard (support ≥3
-    shared customers) — the 'customers also bought' recommender primed
-    straight from order history. Candidate pairs come from a self-join on
-    the DISTINCT (customer, part) table keyed by customer, so the
-    quadratic term is Σ(basket size)² — bounded by account breadth, never
-    |parts|² (the q_orders_duplicate_detection blocking argument); the
-    per-item top-k windows over PAIR aggregates."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    cp = (l.join(o, o.o_orderkey == l.l_orderkey)
-          .select(F.col("o_custkey").alias("cust"),
-                  F.col("l_partkey").alias("part")).distinct())
-    np_ = cp.groupBy("part").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"))
-    b = cp.select(F.col("cust").alias("cust2"), F.col("part").alias("pb"))
-    pairs = (cp.join(b, (F.col("cust2") == F.col("cust"))
-                     & (F.col("part") < F.col("pb")))
-             .groupBy(F.col("part").alias("pa"), "pb")
-             .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("common"))
-             .filter(F.col("common") >= 3))
-    sym = (pairs.select(F.col("pa").alias("part"),
-                        F.col("pb").alias("neighbor"), "common")
-           .union(pairs.select(F.col("pb"), F.col("pa"), "common")))
-    na = np_.select(F.col("part"), F.col("n").alias("na"))
-    nb = np_.select(F.col("part").alias("neighbor"), F.col("n").alias("nb"))
-    scored = (sym.join(na, "part").join(nb, "neighbor")
-              .select("part", "neighbor",
-                      F.col("common").cast("long").alias("common_customers"),
-                      F.expr("CAST(common * 1000000 div (na + nb - common)"
-                             " AS BIGINT)").alias("jaccard_e6")))
-    w = Window.partitionBy("part").orderBy(F.col("jaccard_e6").desc(),
-                                           "neighbor")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 5)
-            .select("part", "neighbor", "common_customers", "jaccard_e6",
-                    F.col("rank").cast("int").alias("rank")))
-
-
-_PV_DECOMP_SQL = """
-WITH m AS (
-  SELECT date_trunc('month', o.o_orderdate) AS month,
-         CAST(sum(CAST(floor(l.l_extendedprice * 100 + 0.5) AS HUGEINT))
-              AS HUGEINT) AS rev,
-         CAST(sum(CAST(l.l_quantity AS HUGEINT)) AS HUGEINT) AS qty
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-  GROUP BY 1
-), j AS (
-  SELECT c.month, c.rev, c.qty, p.rev AS prev_rev, p.qty AS prev_qty
-  FROM m c JOIN m p ON p.month = c.month - INTERVAL 1 MONTH
-)
-SELECT CAST(month AS DATE) AS month,
-       CAST(rev AS BIGINT) AS rev_cents,
-       CAST(prev_rev AS BIGINT) AS prev_rev_cents,
-       CAST(rev - prev_rev AS BIGINT) AS delta_cents,
-       CAST((qty - prev_qty) * prev_rev // prev_qty AS BIGINT)
-           AS volume_effect_cents,
-       CAST(rev - prev_rev - ((qty - prev_qty) * prev_rev // prev_qty)
-            AS BIGINT) AS price_mix_effect_cents
-FROM j
-"""
-
-
-@register("q_orders_price_volume_decomposition", _PV_DECOMP_SQL)
-def q_orders_price_volume_decomposition(spark, sf_dir):
-    """Month-over-month revenue bridge: ΔRev split into a volume effect
-    (Δqty at last month's realized price, exact integer Δqty·rev₋₁ div
-    qty₋₁) and the price/mix residual — the FP&A 'why did revenue move'
-    decomposition, exact by construction (the two effects always sum to
-    the delta because the residual is defined as the remainder). One
-    month aggregate + one self-join on the shifted month; the divide
-    truncates identically on both engines."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    m = (l.join(o, o.o_orderkey == l.l_orderkey)
-         .groupBy(F.date_trunc("month", "o_orderdate").alias("month"))
-         .agg(F.sum(F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-                    .cast("decimal(38,0)")).alias("rev"),
-              F.sum(F.col("l_quantity").cast("decimal(38,0)")).alias("qty")))
-    p = m.select((F.col("month") + F.expr("INTERVAL 1 MONTH")).alias("month"),
-                 F.col("rev").alias("prev_rev"),
-                 F.col("qty").alias("prev_qty"))
-    return (m.join(p, "month")
-            .select(F.col("month").cast("date").alias("month"),
-                    F.col("rev").cast("long").alias("rev_cents"),
-                    F.col("prev_rev").cast("long").alias("prev_rev_cents"),
-                    (F.col("rev") - F.col("prev_rev")).cast("long")
-                    .alias("delta_cents"),
-                    F.expr("CAST((qty - prev_qty) * prev_rev div prev_qty"
-                           " AS BIGINT)").alias("volume_effect_cents"),
-                    F.expr("CAST(rev - prev_rev - ((qty - prev_qty)"
-                           " * prev_rev div prev_qty) AS BIGINT)")
-                    .alias("price_mix_effect_cents")))
-
-
-_COS_HIST_SQL = """
-WITH s AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-  WHERE CAST(concat('0x', substr(md5(CAST(vec_id AS VARCHAR)), 1, 16))
-             AS UBIGINT) % 5 = 0
-), p AS (
-  SELECT least(CAST(floor(
-           (list_dot_product(a.v, b.v)
-            / (sqrt(list_dot_product(a.v, a.v))
-               * sqrt(list_dot_product(b.v, b.v)))) * 10) AS BIGINT), 9)
-             AS bucket
-  FROM s a JOIN s b ON a.vec_id < b.vec_id
-), n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM p)
-SELECT CAST(bucket AS INTEGER) AS bucket,
-       CAST(count(*) AS BIGINT) AS n_pairs,
-       CAST(count(*) * 1000000 // max(n.n) AS BIGINT) AS share_e6
-FROM p CROSS JOIN n GROUP BY bucket
-"""
-
-
-@register("ann_cosine_histogram", _COS_HIST_SQL)
-def ann_cosine_histogram(spark, sf_dir):
-    """Embedding-space calibration: the distribution of pairwise cosines
-    over a deterministic 20% md5 sample of vectors, bucketed by
-    floor(cos·10) — the diagnostic that tells you whether a similarity
-    threshold (dedup's 0.8, linking's 0.95) sits in the distribution's
-    tail or its bulk, and whether the space has collapsed (all mass in
-    one bucket). The SAMPLE bounds the quadratic term: n²/25 pairs by
-    md5-selecting IDs before the join, never sampling pairs after; the
-    cosine reuses the functions/vectors.cosine zip_with expression
-    (identical doubles cross-engine, floor lands identically)."""
-    from .functions.vectors import cosine
-    embs = _t(spark, sf_dir, "embeddings")
-    s = (embs.filter(F.expr(
-            "CAST(conv(substring(md5(CAST(vec_id AS STRING)), 1, 16),"
-            " 16, 10) AS DECIMAL(20,0)) % 5 = 0"))
-         .select("vec_id", F.col("embedding").cast("array<double>")
-                 .alias("v")))
-    b = s.select(F.col("vec_id").alias("id2"), F.col("v").alias("v2"))
-    p = (s.crossJoin(b).filter(F.col("vec_id") < F.col("id2"))
-         .select(F.least(F.floor(cosine(F.col("v"), F.col("v2")) * 10)
-                         .cast("long"), F.lit(9)).alias("bucket")))
-    n = p.agg(F.count(F.lit(1)).alias("n"))
-    return (p.groupBy("bucket").agg(F.count(F.lit(1)).cast("long")
-                                    .alias("n_pairs"))
-            .crossJoin(F.broadcast(n))
-            .select(F.col("bucket").cast("int").alias("bucket"), "n_pairs",
-                    F.expr("CAST(n_pairs * 1000000 div n AS BIGINT)")
-                    .alias("share_e6")))
-
-
-_SESSION_PATHS_SQL = """
-WITH flagged AS (
-  SELECT user_id, ts, event_id, event_type,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sess AS (
-  SELECT user_id, ts, event_id, event_type,
-         sum(new_session) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS sid
-  FROM flagged
-), paths AS (
-  SELECT user_id, sid,
-         string_agg(event_type, '>' ORDER BY ts, event_id) AS path
-  FROM sess GROUP BY 1, 2
-), counted AS (
-  SELECT path, CAST(count(*) AS BIGINT) AS n_sessions FROM paths GROUP BY 1
-)
-SELECT path, n_sessions, CAST(rank AS INTEGER) AS rank
-FROM (SELECT *, row_number() OVER (ORDER BY n_sessions DESC, path) AS rank
-      FROM counted)
-WHERE rank <= 20
-"""
-
-
-@register("q_events_session_paths", _SESSION_PATHS_SQL)
-def q_events_session_paths(spark, sf_dir):
-    """Top-20 whole-session event paths (30-minute-gap sessionization, the
-    q_events_sessionize rule, then the session's full ordered type
-    sequence as a '>'-joined string) — the session-replay summary behind
-    every UX funnel review. Path assembly is order-DETERMINISTIC on both
-    engines: DuckDB via string_agg(... ORDER BY), Spark by sorting the
-    collected (ts, event_id, type) structs before joining — never a bare
-    collect_list, whose order is partition-dependent. Sessions group on
-    (user, running session id): one shuffle on user_id."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    new_s = F.when(prev.isNull()
-                   | ((F.unix_timestamp("ts") - F.unix_timestamp(prev))
-                      > 1800), 1).otherwise(0)
-    sess = (e.withColumn("new_session", new_s)
-            .withColumn("sid", F.sum("new_session").over(
-                w.rowsBetween(Window.unboundedPreceding, 0))))
-    paths = (sess.groupBy("user_id", "sid")
-             .agg(F.array_join(
-                 F.transform(
-                     F.array_sort(F.collect_list(
-                         F.struct("ts", "event_id", "event_type"))),
-                     lambda s: s.event_type), ">").alias("path")))
-    counted = paths.groupBy("path").agg(
-        F.count(F.lit(1)).cast("long").alias("n_sessions"))
-    wr = Window.orderBy(F.col("n_sessions").desc(), "path")
-    return (counted.withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") <= 20)
-            .select("path", "n_sessions",
-                    F.col("rank").cast("int").alias("rank")))
-
-
-_LSH_CONFIGS = ((2, 32), (4, 16), (8, 8), (16, 4))
-
-
-def _pow_chain(var: str, n: int) -> str:
-    """Explicit power-by-squaring multiply chain as an expression STRING —
-    the same string runs in Spark SQL and DuckDB, and because every step
-    is a plain IEEE double multiply (no pow(), whose last ulp is
-    libm-dependent), both engines produce bit-identical doubles."""
-    if n == 1:
-        return var
-    half = _pow_chain(var, n // 2)
-    sq = f"({half} * {half})"
-    return f"({sq} * {var})" if n % 2 else sq
-
-
-def _lsh_tuning_sql() -> str:
-    selects = []
-    for r, b in _LSH_CONFIGS:
-        p1 = _pow_chain("(CAST(j AS DOUBLE) / 100.0)", r)
-        miss = _pow_chain(f"(1.0 - {p1})", b)
-        selects.append(
-            f"SELECT CAST(j AS INTEGER) AS jaccard_pct, {r} AS rows_per_band,"
-            f" {b} AS n_bands,"
-            f" round(1.0 - {miss}, 6) AS p_detect"
-            f" FROM range(5, 100, 5) t(j)")
-    return ("SELECT jaccard_pct, CAST(rows_per_band AS INTEGER)"
-            " AS rows_per_band, CAST(n_bands AS INTEGER) AS n_bands,"
-            " p_detect FROM (" + " UNION ALL ".join(selects) + ")")
-
-
-@register("dedup_lsh_tuning_curve", _lsh_tuning_sql())
-def dedup_lsh_tuning_curve(spark, sf_dir):
-    """MinHash-LSH parameter-tuning table: the detection s-curve
-    P(candidate) = 1 − (1 − J^r)^b over a Jaccard grid for the four
-    64-hash band layouts — the design tool that picks (r, b) for a target
-    near-dup threshold BEFORE a 100 TB dedup run (operators/dedup's
-    default 16×4 vs the alternatives, false-positive tail vs recall
-    cliff). Every power is an explicit power-by-squaring MULTIPLY CHAIN
-    generated once and run verbatim on both engines — plain IEEE double
-    multiplies are bit-exact cross-engine where pow()'s last ulp is not.
-    Pure computation: a 19-row range × 4 configs, no table scan."""
-    grid = spark.range(1, 20).select((F.col("id") * 5).cast("int")
-                                     .alias("jaccard_pct"))
-    parts = []
-    for r, b in _LSH_CONFIGS:
-        p1 = _pow_chain("(CAST(jaccard_pct AS DOUBLE) / 100.0)", r)
-        miss = _pow_chain(f"(1.0 - {p1})", b)
-        parts.append(grid.select(
-            "jaccard_pct",
-            F.lit(r).cast("int").alias("rows_per_band"),
-            F.lit(b).cast("int").alias("n_bands"),
-            F.expr(f"round(1.0 - {miss}, 6)").alias("p_detect")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.union(p)
-    return out
-
-
-_NATION_FLOW_SQL = """
-WITH f AS (
-  SELECT ns.n_name AS supp_nation, nc.n_name AS cust_nation,
-         CAST(sum(CAST(floor(l.l_extendedprice * 100 + 0.5) AS HUGEINT))
-              AS HUGEINT) AS cents
-  FROM lineitem l
-  JOIN orders o ON o.o_orderkey = l.l_orderkey
-  JOIN customer c ON c.c_custkey = o.o_custkey
-  JOIN nation nc ON nc.n_nationkey = c.c_nationkey
-  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-  JOIN nation ns ON ns.n_nationkey = s.s_nationkey
-  GROUP BY 1, 2
-), t AS (SELECT sum(cents) AS total FROM f)
-SELECT supp_nation, cust_nation,
-       round(CAST(cents AS DOUBLE) / 100, 2) AS revenue,
-       CAST(cents * 1000000 // t.total AS BIGINT) AS share_e6
-FROM f CROSS JOIN t
-"""
-
-
-@register("q_nation_flow_matrix", _NATION_FLOW_SQL)
-def q_nation_flow_matrix(spark, sf_dir):
-    """Full supplier-nation × customer-nation trade-flow matrix with exact
-    e6 global share — the Sankey behind TPC-H Q7's two-nation slice: who
-    ships value to whom, over every pair at once. Exact cents through the
-    whole star join; nation/supplier/customer dims broadcast (the Q5/Q7
-    plan-guard discipline), so the only shuffle is the lineitem-orders
-    equi-join and a |nations|² aggregate."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    nc = n.select(F.col("n_nationkey").alias("cnk"),
-                  F.col("n_name").alias("cust_nation"))
-    ns = n.select(F.col("n_nationkey").alias("snk"),
-                  F.col("n_name").alias("supp_nation"))
-    f = (l.join(o, o.o_orderkey == l.l_orderkey)
-         .join(F.broadcast(c), c.c_custkey == o.o_custkey)
-         .join(F.broadcast(nc), F.col("cnk") == c.c_nationkey)
-         .join(F.broadcast(s), s.s_suppkey == l.l_suppkey)
-         .join(F.broadcast(ns), F.col("snk") == s.s_nationkey)
-         .groupBy("supp_nation", "cust_nation")
-         .agg(F.sum(F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-                    .cast("decimal(38,0)")).alias("cents")))
-    t = f.agg(F.sum("cents").alias("total"))
-    return (f.crossJoin(F.broadcast(t))
-            .select("supp_nation", "cust_nation",
-                    F.round(F.col("cents").cast("double") / 100, 2)
-                    .alias("revenue"),
-                    F.expr("CAST(cents * 1000000 div total AS BIGINT)")
-                    .alias("share_e6")))
-
-
-_POSITION_VALUE_SQL = """
-WITH flagged AS (
-  SELECT user_id, ts, event_id,
-         CAST(floor("value" * 100 + 0.5) AS HUGEINT) AS cents,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sess AS (
-  SELECT user_id, ts, event_id, cents,
-         sum(new_session) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS sid
-  FROM flagged
-), pos AS (
-  SELECT least(row_number() OVER (PARTITION BY user_id, sid
-                                  ORDER BY ts, event_id), 10) AS position,
-         cents
-  FROM sess
-)
-SELECT CAST(position AS INTEGER) AS position,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(cents) * 10000 // count(*) AS BIGINT) AS avg_value_e6
-FROM pos GROUP BY 1
-"""
-
-
-@register("q_events_position_value", _POSITION_VALUE_SQL)
-def q_events_position_value(spark, sf_dir):
-    """Value by position-in-session (1st event, 2nd, … capped at 10+,
-    30-minute-gap sessions): does value concentrate at session entry or
-    build toward the end — the engagement-depth curve behind onboarding
-    and ranking decisions. Exact integer average (cents·10⁴ div n →
-    e6-scaled units); the position window shares the sessionize sort
-    (one user_id shuffle, two chained windows on the same key)."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    new_s = F.when(prev.isNull()
-                   | ((F.unix_timestamp("ts") - F.unix_timestamp(prev))
-                      > 1800), 1).otherwise(0)
-    sess = (e.select("user_id", "ts", "event_id",
-                     F.floor(F.col("value") * 100 + F.lit(0.5))
-                     .cast("decimal(38,0)").alias("cents"))
-            .withColumn("new_session", new_s)
-            .withColumn("sid", F.sum("new_session").over(
-                w.rowsBetween(Window.unboundedPreceding, 0))))
-    wp = Window.partitionBy("user_id", "sid").orderBy("ts", "event_id")
-    pos = sess.select(F.least(F.row_number().over(wp), F.lit(10))
-                      .cast("int").alias("position"), "cents")
-    return (pos.groupBy("position")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
-                 F.expr("CAST(sum(cents) * 10000 div count(1) AS BIGINT)")
-                 .alias("avg_value_e6")))
-
-
-_BACKLOG_SQL = """
-WITH close AS (
-  SELECT l_orderkey, max(CAST(l_shipdate AS DATE)) AS close_d
-  FROM lineitem GROUP BY 1
-), ev AS (
-  SELECT CAST(date_trunc('month', o.o_orderdate) AS DATE) AS m,
-         1 AS opened, 0 AS closed
-  FROM orders o
-  UNION ALL
-  SELECT CAST(date_trunc('month', c.close_d) AS DATE), 0, 1
-  FROM close c
-), mo AS (
-  SELECT m, CAST(sum(opened) AS BIGINT) AS opened,
-         CAST(sum(closed) AS BIGINT) AS closed
-  FROM ev GROUP BY 1
-)
-SELECT m AS month, opened, closed,
-       CAST(sum(opened - closed) OVER (ORDER BY m) AS BIGINT)
-           AS eom_backlog
-FROM mo
-"""
-
-
-@register("q_orders_backlog_series", _BACKLOG_SQL)
-def q_orders_backlog_series(spark, sf_dir):
-    """Monthly open-order backlog: orders open at their order date and
-    close when their LAST line ships (max l_shipdate per order); the
-    series is the classic signed-event technique — +1/−1 rows, one
-    monthly aggregate, then a running sum over MONTHS (a ~100-row window
-    regardless of order count; never an order×day interval unnest, which
-    at 10⁹ orders × 80-day lifetimes would be 10¹¹ rows). The
-    operations-review chart: is fulfillment keeping up with intake."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    close = (l.groupBy("l_orderkey")
-             .agg(F.max(F.col("l_shipdate").cast("date")).alias("close_d")))
-    ev = (o.select(F.date_trunc("month", "o_orderdate").cast("date")
-                   .alias("m"), F.lit(1).alias("opened"),
-                   F.lit(0).alias("closed"))
-          .union(close.select(F.date_trunc("month", "close_d").cast("date")
-                              .alias("m"), F.lit(0), F.lit(1))))
-    mo = ev.groupBy("m").agg(F.sum("opened").cast("long").alias("opened"),
-                             F.sum("closed").cast("long").alias("closed"))
-    w = Window.orderBy("m").rowsBetween(Window.unboundedPreceding, 0)
-    return mo.select(F.col("m").alias("month"), "opened", "closed",
-                     F.sum(F.col("opened") - F.col("closed")).over(w)
-                     .cast("long").alias("eom_backlog"))
-
-
-_FISCAL_445_SQL = """
-WITH d AS (
-  SELECT datediff('day', DATE '1992-01-01', o.o_orderdate) AS di,
-         CAST(floor(o.o_totalprice * 100 + 0.5) AS HUGEINT) AS cents
-  FROM orders o WHERE o.o_orderdate >= DATE '1992-01-01'
-), w AS (
-  SELECT (di // 7) // 52 AS fy_off, (di // 7) % 52 AS wy, cents FROM d
-), p AS (
-  SELECT 1992 + fy_off AS fiscal_year,
-         CAST((wy // 13) * 3
-              + CASE WHEN wy % 13 < 4 THEN 1
-                     WHEN wy % 13 < 8 THEN 2 ELSE 3 END AS INTEGER)
-             AS fiscal_period,
-         cents
-  FROM w
-)
-SELECT CAST(fiscal_year AS INTEGER) AS fiscal_year, fiscal_period,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       round(CAST(sum(cents) AS DOUBLE) / 100, 2) AS revenue
-FROM p GROUP BY 1, 2
-"""
-
-
-@register("q_orders_fiscal_445", _FISCAL_445_SQL)
-def q_orders_fiscal_445(spark, sf_dir):
-    """Revenue on a 4-4-5 fiscal calendar (13-week quarters split 4/4/5
-    weeks — the retail-standard reporting calendar, where every period
-    has the same weekday mix so periods compare cleanly): dates map by
-    pure integer arithmetic from the 1992-01-01 anchor (day → week →
-    52-week fiscal year → quarter → period; the real-world 53rd-week
-    leap rule is out of scope and disclosed). A calendar TRANSFORM, not
-    a calendar TABLE — no dimension join, map-side expression only."""
-    o = _t(spark, sf_dir, "orders")
-    d = (o.filter(F.col("o_orderdate") >= F.lit("1992-01-01").cast("date"))
-         .select(F.datediff("o_orderdate",
-                            F.lit("1992-01-01").cast("date")).alias("di"),
-                 F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-                 .cast("decimal(38,0)").alias("cents")))
-    w = d.select(F.expr("(di div 7) div 52").alias("fy_off"),
-                 F.expr("(di div 7) % 52").alias("wy"), "cents")
-    p = w.select((F.lit(1992) + F.col("fy_off")).cast("int")
-                 .alias("fiscal_year"),
-                 F.expr("CAST((wy div 13) * 3 + CASE WHEN wy % 13 < 4 THEN 1"
-                        " WHEN wy % 13 < 8 THEN 2 ELSE 3 END AS INT)")
-                 .alias("fiscal_period"), "cents")
-    return (p.groupBy("fiscal_year", "fiscal_period")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_orders"),
-                 F.round(F.sum("cents").cast("double") / 100, 2)
-                 .alias("revenue")))
-
-
-_SRM_SQL = """
-WITH u AS (
-  SELECT DISTINCT event_type, user_id, user_id % 2 AS arm FROM events
-), g AS (
-  SELECT event_type,
-         CAST(count(*) FILTER (WHERE arm = 0) AS HUGEINT) AS n0,
-         CAST(count(*) FILTER (WHERE arm = 1) AS HUGEINT) AS n1
-  FROM u GROUP BY 1
-  UNION ALL
-  SELECT '_all_',
-         CAST(count(DISTINCT CASE WHEN arm = 0 THEN user_id END)
-              AS HUGEINT),
-         CAST(count(DISTINCT CASE WHEN arm = 1 THEN user_id END)
-              AS HUGEINT)
-  FROM u
-)
-SELECT event_type AS scope, CAST(n0 AS BIGINT) AS n_arm0,
-       CAST(n1 AS BIGINT) AS n_arm1,
-       CAST((n0 - n1) * (n0 - n1) * 1000000 // (n0 + n1) AS BIGINT)
-           AS chi2_e6,
-       CAST(CASE WHEN (n0 - n1) * (n0 - n1) * 1000000 // (n0 + n1)
-                      >= 3841459 THEN 1 ELSE 0 END AS INTEGER) AS srm_flag
-FROM g
-"""
-
-
-@register("q_events_srm_check", _SRM_SQL)
-def q_events_srm_check(spark, sf_dir):
-    """Sample-ratio-mismatch guardrail for the user_id%2 experiment split
-    q_events_abtest_lift reads from: per exposure scope (each event type
-    + overall), the 1-dof chi-square against the designed 50/50 —
-    algebraically (n₀−n₁)²/(n₀+n₁), exact e6 — flagged at the 3.8415
-    critical value (e6 literal, identical both sides). The check that
-    must pass BEFORE any lift readout is believed: an SRM means the
-    assignment or logging is broken, not the treatment. One distinct +
-    two tiny aggregates."""
-    e = _t(spark, sf_dir, "events")
-    u = (e.select("event_type", "user_id",
-                  (F.col("user_id") % 2).alias("arm")).distinct())
-    per = u.groupBy("event_type").agg(
-        F.sum((F.col("arm") == 0).cast("int")).cast("decimal(38,0)")
-        .alias("n0"),
-        F.sum((F.col("arm") == 1).cast("int")).cast("decimal(38,0)")
-        .alias("n1"))
-    allr = u.agg(
-        F.countDistinct(F.when(F.col("arm") == 0, F.col("user_id")))
-        .cast("decimal(38,0)").alias("n0"),
-        F.countDistinct(F.when(F.col("arm") == 1, F.col("user_id")))
-        .cast("decimal(38,0)").alias("n1")).select(
-            F.lit("_all_").alias("event_type"), "n0", "n1")
-    g = per.union(allr)
-    return g.select(
-        F.col("event_type").alias("scope"),
-        F.col("n0").cast("long").alias("n_arm0"),
-        F.col("n1").cast("long").alias("n_arm1"),
-        F.expr("CAST((n0 - n1) * (n0 - n1) * 1000000 div (n0 + n1)"
-               " AS BIGINT)").alias("chi2_e6"),
-        F.expr("CAST(CASE WHEN (n0 - n1) * (n0 - n1) * 1000000"
-               " div (n0 + n1) >= 3841459 THEN 1 ELSE 0 END AS INT)")
-        .alias("srm_flag"))
-
-
-_SQUARES_SQL = f"""
-WITH m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), bd AS (
-  SELECT a AS z, b AS x FROM e UNION ALL SELECT b, a FROM e
-), codeg AS (
-  SELECT e1.x AS u, e2.x AS w, CAST(count(*) AS HUGEINT) AS cn
-  FROM bd e1 JOIN bd e2 ON e2.z = e1.z AND e1.x < e2.x
-  GROUP BY 1, 2
-)
-SELECT CAST(count(*) AS BIGINT) AS n_pairs,
-       CAST(sum(CASE WHEN cn >= 2 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_pairs_cn2,
-       CAST(sum(cn * (cn - 1) // 2) AS BIGINT) AS sum_c2,
-       CAST(sum(cn * (cn - 1) // 2) // 2 AS BIGINT) AS n_squares
-FROM codeg
-"""
-
-
-@register("kg_squares_docs", _SQUARES_SQL)
-def kg_squares_docs(spark, sf_dir):
-    """4-cycle (square) census of the documents co-occurrence graph — the
-    next motif after triangles (kg_triangles_docs /
-    kg_transitivity_docs): each square is determined by a diagonal pair
-    plus 2 of their common neighbors, so #C₄ = Σ_{{u<w}} C(codeg,2) / 2
-    (every square has exactly 2 diagonals — the sum is always even). The
-    co-degree table is ONE wedge self-join on the shared neighbor (the
-    Adamic-Adar/link-prediction join shape, graph_algos.adamic_adar) —
-    never path enumeration. Exact integers throughout."""
-    edges = _cooc_edges(spark, sf_dir)
-    bd = (edges.select(F.col("term_a").alias("z"), F.col("term_b").alias("x"))
-          .union(edges.select(F.col("term_b"), F.col("term_a"))))
-    e2 = bd.select(F.col("z").alias("z2"), F.col("x").alias("x2"))
-    codeg = (bd.join(e2, (F.col("z2") == F.col("z"))
-                     & (F.col("x") < F.col("x2")))
-             .groupBy("x", "x2")
-             .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("cn")))
-    return codeg.agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.sum((F.col("cn") >= 2).cast("int")).cast("long")
-        .alias("n_pairs_cn2"),
-        F.sum(F.expr("cn * (cn - 1) div 2")).cast("long").alias("sum_c2"),
-        F.expr("CAST(sum(cn * (cn - 1) div 2) div 2 AS BIGINT)")
-        .alias("n_squares"))
-
-
-_BOT_FLAGS_SQL = """
-WITH g AS (
-  SELECT user_id, ts, event_id,
-         epoch_us(ts) // 1000000
-           - epoch_us(lag(ts) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id)) // 1000000
-             AS gap
-  FROM events
-), u AS (
-  SELECT user_id, CAST(count(*) AS HUGEINT) AS n,
-         CAST(count(DISTINCT date_trunc('minute', ts)) AS HUGEINT)
-             AS active_minutes,
-         CAST(count(gap) AS HUGEINT) AS m,
-         CAST(sum(CAST(gap AS HUGEINT)) AS HUGEINT) AS sg,
-         CAST(sum(CAST(gap AS HUGEINT) * CAST(gap AS HUGEINT)) AS HUGEINT)
-             AS sg2
-  FROM g GROUP BY 1
-), x AS (
-  SELECT user_id, n, active_minutes,
-         n * 1000000 // active_minutes AS epm_e6,
-         CASE WHEN m >= 2 AND sg > 0
-              THEN (m * sg2 - sg * sg) * 1000000 // (m * sg)
-              ELSE NULL END AS gap_vmr_e6
-  FROM u
-)
-SELECT user_id, CAST(n AS BIGINT) AS n_events,
-       CAST(active_minutes AS BIGINT) AS active_minutes,
-       CAST(epm_e6 AS BIGINT) AS events_per_minute_e6,
-       CAST(gap_vmr_e6 AS BIGINT) AS gap_vmr_e6,
-       CAST(CASE WHEN epm_e6 > 3000000 THEN 1 ELSE 0 END AS INTEGER)
-           AS flag_rate,
-       CAST(CASE WHEN n >= 30 AND gap_vmr_e6 < 200000 THEN 1 ELSE 0 END
-            AS INTEGER) AS flag_metronome,
-       CAST(rank AS INTEGER) AS rank
-FROM (SELECT *, row_number() OVER (ORDER BY gap_vmr_e6, user_id) AS rank
-      FROM x WHERE n >= 30 AND gap_vmr_e6 IS NOT NULL)
-WHERE rank <= 10
-"""
-
-
-@register("q_events_bot_flags", _BOT_FLAGS_SQL)
-def q_events_bot_flags(spark, sf_dir):
-    """Bot/abuse heuristics over the event stream: flag users running
-    hotter than 3 events per distinct active minute (rate flag) or with
-    ≥50 events whose inter-arrival gaps are metronome-regular (gap VMR
-    < 0.2 — human traffic is bursty, VMR ≥ 1; scripted traffic is not) —
-    both as exact integer cross-multiplications: epm = n·10⁶ div
-    |active minutes|, VMR = (mΣg²−(Σg)²)·10⁶ div (mΣg). The
-    abuse-filtering pass a training-data pipeline runs before trusting
-    engagement signals. Emitted as the top-10 most-metronomic leaderboard
-    (lowest VMR among users with ≥30 events) so the review queue is never
-    empty, with both threshold flags as columns (this synthetic corpus is
-    honestly bot-free — the flags verify as zeros over non-trivial rows).
-    One user_id-partitioned lag window + one aggregate; the leaderboard
-    window runs over per-user AGGREGATES."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    g = e.select(
-        "user_id", "ts",
-        (F.expr("unix_micros(cast(ts as timestamp)) div 1000000")
-         - F.expr("unix_micros(cast(lag(ts) over (partition by user_id"
-                  " order by ts, event_id) as timestamp)) div 1000000"))
-        .alias("gap"))
-    dgap = F.col("gap").cast("decimal(38,0)")
-    u = g.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-        F.countDistinct(F.date_trunc("minute", "ts"))
-        .cast("decimal(38,0)").alias("active_minutes"),
-        F.count("gap").cast("decimal(38,0)").alias("m"),
-        F.sum(dgap).alias("sg"),
-        F.sum(dgap * dgap).alias("sg2"))
-    x = u.select(
-        "user_id", "n", "active_minutes", "m", "sg", "sg2",
-        F.expr("n * 1000000 div active_minutes").alias("epm_e6"),
-        F.expr("CASE WHEN m >= 2 AND sg > 0 THEN"
-               " (m * sg2 - sg * sg) * 1000000 div (m * sg)"
-               " ELSE NULL END").alias("gap_vmr_e6"))
-    wr = Window.orderBy("gap_vmr_e6", "user_id")
-    return (x.filter((F.col("n") >= 30) & F.col("gap_vmr_e6").isNotNull())
-            .withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") <= 10)
-            .select("user_id", F.col("n").cast("long").alias("n_events"),
-                    F.col("active_minutes").cast("long")
-                    .alias("active_minutes"),
-                    F.col("epm_e6").cast("long")
-                    .alias("events_per_minute_e6"),
-                    F.col("gap_vmr_e6").cast("long").alias("gap_vmr_e6"),
-                    F.when(F.col("epm_e6") > 3000000, 1).otherwise(0)
-                    .cast("int").alias("flag_rate"),
-                    F.when((F.col("n") >= 30)
-                           & (F.col("gap_vmr_e6") < 200000), 1).otherwise(0)
-                    .cast("int").alias("flag_metronome"),
-                    F.col("rank").cast("int").alias("rank")))
-
-
-_SHARD_MANIFEST_SQL = """
-WITH c AS (
-  SELECT doc_id, n_chars,
-         sum(n_chars) OVER (ORDER BY doc_id) - n_chars AS start_chars
-  FROM documents
-), s AS (
-  SELECT start_chars // 50000 AS shard, doc_id, n_chars FROM c
-)
-SELECT CAST(shard AS INTEGER) AS shard,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_chars) AS BIGINT) AS n_chars,
-       CAST(min(doc_id) AS BIGINT) AS first_doc,
-       CAST(max(doc_id) AS BIGINT) AS last_doc
-FROM s GROUP BY 1
-"""
-
-
-@register("data_shard_manifest", _SHARD_MANIFEST_SQL)
-def data_shard_manifest(spark, sf_dir):
-    """Output-shard planning: contiguous ~50 KB shards by cumulative char
-    budget in doc_id order (a doc starts a new shard when its START
-    offset crosses the boundary — deterministic, no doc ever splits),
-    emitting the manifest (doc range, docs, bytes per shard) a writer
-    fans out over. The running sum here is a single window over docs;
-    the production-scale variant is the two-phase bucketed running sum
-    text_domain_budget uses (partial sums per bucket, broadcast prefix) —
-    same arithmetic, noted per that query's plan guard."""
-    d = _t(spark, sf_dir, "documents")
-    w = Window.orderBy("doc_id").rowsBetween(Window.unboundedPreceding, 0)
-    c = d.select("doc_id", "n_chars",
-                 (F.sum("n_chars").over(w) - F.col("n_chars"))
-                 .alias("start_chars"))
-    return (c.groupBy(F.expr("start_chars div 50000").cast("int")
-                      .alias("shard"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                 F.sum("n_chars").cast("long").alias("n_chars"),
-                 F.min("doc_id").cast("long").alias("first_doc"),
-                 F.max("doc_id").cast("long").alias("last_doc")))
-
-
-_GROWTH_ACCT_SQL = """
-WITH u AS (
-  SELECT DISTINCT CAST(date_trunc('week', CAST(ts AS DATE)) AS DATE) AS wk,
-         user_id
-  FROM events
-), fw AS (SELECT user_id, min(wk) AS first_wk FROM u GROUP BY 1),
-lab AS (
-  SELECT u.wk, u.user_id,
-         CASE WHEN fw.first_wk = u.wk THEN 1 ELSE 0 END AS is_new,
-         CASE WHEN p.user_id IS NOT NULL THEN 1 ELSE 0 END AS is_retained
-  FROM u JOIN fw USING (user_id)
-  LEFT JOIN u p ON p.user_id = u.user_id AND p.wk = u.wk - 7
-), cur AS (
-  SELECT wk, CAST(count(*) AS BIGINT) AS active,
-         CAST(sum(is_new) AS BIGINT) AS new_users,
-         CAST(sum(is_retained) AS BIGINT) AS retained,
-         CAST(sum(CASE WHEN is_new = 0 AND is_retained = 0
-                  THEN 1 ELSE 0 END) AS BIGINT) AS resurrected
-  FROM lab GROUP BY wk
-), churn AS (
-  SELECT a.wk + 7 AS wk, CAST(count(*) AS BIGINT) AS churned
-  FROM u a LEFT JOIN u b ON b.user_id = a.user_id AND b.wk = a.wk + 7
-  WHERE b.user_id IS NULL GROUP BY a.wk + 7
-)
-SELECT cur.wk AS week, cur.active, cur.new_users, cur.retained,
-       cur.resurrected, CAST(coalesce(churn.churned, 0) AS BIGINT)
-           AS churned
-FROM cur LEFT JOIN churn ON churn.wk = cur.wk
-"""
-
-
-@register("q_events_growth_accounting", _GROWTH_ACCT_SQL)
-def q_events_growth_accounting(spark, sf_dir):
-    """Weekly growth accounting — the canonical WAU decomposition (active
-    = new + retained + resurrected, plus last week's churned) every
-    growth team reports: new = first-ever week, retained = also active
-    last week, resurrected = previously active but not last week, churned
-    = active last week and gone this week. All from ONE distinct
-    (user, week) table: a min-aggregate for first-week, two self-equi-
-    joins on the shifted week (the q_events_graph_churn shape) — no
-    per-user history arrays, no windows over raw events."""
-    e = _t(spark, sf_dir, "events")
-    u = (e.select(F.date_trunc("week", F.col("ts").cast("date"))
-                  .cast("date").alias("wk"), "user_id").distinct())
-    fw = u.groupBy("user_id").agg(F.min("wk").alias("first_wk"))
-    p = u.select(F.date_add("wk", 7).alias("wk"),
-                 F.col("user_id").alias("uid_p"), F.lit(1).alias("was_prev"))
-    lab = (u.join(fw, "user_id")
-           .join(p, (p.wk == u.wk) & (F.col("uid_p") == u.user_id), "left")
-           .select(u.wk.alias("wk"),
-                   (F.col("first_wk") == u.wk).cast("int").alias("is_new"),
-                   F.coalesce("was_prev", F.lit(0)).alias("is_retained")))
-    cur = (lab.groupBy("wk")
-           .agg(F.count(F.lit(1)).cast("long").alias("active"),
-                F.sum("is_new").cast("long").alias("new_users"),
-                F.sum("is_retained").cast("long").alias("retained"),
-                F.sum(((F.col("is_new") == 0) & (F.col("is_retained") == 0))
-                      .cast("int")).cast("long").alias("resurrected")))
-    nxt = u.select(F.col("wk").alias("nwk"),
-                   F.col("user_id").alias("uid_n"))
-    churn = (u.join(nxt, (F.col("nwk") == F.date_add(u.wk, 7))
-                    & (F.col("uid_n") == u.user_id), "left")
-             .filter(F.col("uid_n").isNull())
-             .groupBy(F.date_add("wk", 7).alias("wk"))
-             .agg(F.count(F.lit(1)).cast("long").alias("churned")))
-    return (cur.join(churn, "wk", "left")
-            .select(F.col("wk").alias("week"), "active", "new_users",
-                    "retained", "resurrected",
-                    F.coalesce("churned", F.lit(0)).cast("long")
-                    .alias("churned")))
-
-
-_ATTR_WINDOWS_SQL = """
-WITH h AS (
-  SELECT event_type, ts,
-         last_value(CASE WHEN event_type <> 'purchase' THEN event_type END
-                    IGNORE NULLS) OVER w AS last_ch,
-         last_value(CASE WHEN event_type <> 'purchase' THEN ts END
-                    IGNORE NULLS) OVER w AS last_ts
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-), conv AS (
-  SELECT last_ch, last_ts, ts FROM h
-  WHERE event_type = 'purchase' AND last_ch IS NOT NULL
-), fan AS (
-  SELECT w.label, w.secs, conv.last_ch, conv.last_ts, conv.ts
-  FROM conv CROSS JOIN (VALUES ('1h', 3600), ('1d', 86400),
-                               ('7d', 604800)) w(label, secs)
-)
-SELECT label AS attr_window,
-       CASE WHEN epoch_us(ts) // 1000000 - epoch_us(last_ts) // 1000000
-                 <= secs THEN last_ch ELSE '_expired_' END AS channel,
-       CAST(count(*) AS BIGINT) AS conversions
-FROM fan GROUP BY 1, 2
-"""
-
-
-@register("q_events_attribution_windows", _ATTR_WINDOWS_SQL)
-def q_events_attribution_windows(spark, sf_dir):
-    """Attribution-window sensitivity: last-touch conversions per channel
-    under 1-hour / 1-day / 7-day lookback windows, with touches older
-    than the window reported as '_expired_' — the analysis that shows how
-    much credit the window choice itself moves (the silent parameter in
-    every q_events_attribution-style report). Because last-touch is the
-    MOST RECENT touch, an expired last touch implies no in-window touch
-    at all, so one (channel, timestamp) pair per purchase suffices — the
-    3-window fan-out is a literal cross join against CONVERSIONS, never
-    a re-scan per window."""
-    e = _t(spark, sf_dir, "events")
-    w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
-         .rowsBetween(Window.unboundedPreceding, -1))
-    touch = F.when(F.col("event_type") != "purchase", F.col("event_type"))
-    touch_ts = F.when(F.col("event_type") != "purchase", F.col("ts"))
-    h = e.select("event_type", "ts",
-                 F.last(touch, ignorenulls=True).over(w).alias("last_ch"),
-                 F.last(touch_ts, ignorenulls=True).over(w).alias("last_ts"))
-    conv = (h.filter((F.col("event_type") == "purchase")
-                     & F.col("last_ch").isNotNull())
-            .select("last_ch", "last_ts", "ts"))
-    wins = spark.createDataFrame(
-        [("1h", 3600), ("1d", 86400), ("7d", 604800)], "label string,"
-        " secs long")
-    fan = conv.crossJoin(F.broadcast(wins))
-    ch = F.when(
-        (F.expr("unix_micros(cast(ts as timestamp)) div 1000000")
-         - F.expr("unix_micros(cast(last_ts as timestamp)) div 1000000"))
-        <= F.col("secs"), F.col("last_ch")).otherwise("_expired_")
-    return (fan.groupBy(F.col("label").alias("attr_window"),
-                        ch.alias("channel"))
-            .agg(F.count(F.lit(1)).cast("long").alias("conversions")))
-
-
-_REACHABILITY_SQL = f"""
-WITH comp AS ({_components_sql(330)})
-, sizes AS (
-  SELECT canon, CAST(count(*) AS HUGEINT) AS sz
-  FROM comp GROUP BY 1
-)
-SELECT CAST(count(*) AS BIGINT) AS n_components,
-       CAST(sum(sz) AS BIGINT) AS n_nodes,
-       CAST(max(sz) AS BIGINT) AS largest,
-       CAST(sum(sz * (sz - 1) // 2) AS BIGINT) AS reachable_pairs,
-       CAST(sum(sz * (sz - 1) // 2) * 1000000
-            // (sum(sz) * (sum(sz) - 1) // 2) AS BIGINT)
-           AS connectivity_e6
-FROM sizes
-"""
-
-
-@register("kg_reachability_docs", _REACHABILITY_SQL)
-def kg_reachability_docs(spark, sf_dir):
-    """Reachability summary of the sparsified co-occurrence graph: via the
-    REAL distributed connected-components operator
-    (canonicalize.connected_components, large-star/small-star), component
-    sizes collapse to reachable-pair count ΣC(sz,2) and the connectivity
-    ratio (reachable pairs / all pairs, exact e6) — the 'how fragmented
-    is the graph' number that decides whether graph-wide algorithms are
-    even meaningful, at the cost of a components run plus ONE size
-    aggregate (never pairwise BFS)."""
-    from .operators.canonicalize import connected_components
-    edges = _cooc_edges(spark, sf_dir, 330)
-    comp = connected_components(
-        edges.select(F.col("term_a").alias("src"),
-                     F.col("term_b").alias("dst")),
-        driver_threshold=0)
-    sizes = comp.groupBy("canon").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("sz"))
-    return sizes.agg(
-        F.count(F.lit(1)).cast("long").alias("n_components"),
-        F.sum("sz").cast("long").alias("n_nodes"),
-        F.max("sz").cast("long").alias("largest"),
-        F.sum(F.expr("sz * (sz - 1) div 2")).cast("long")
-        .alias("reachable_pairs"),
-        F.expr("CAST(sum(sz * (sz - 1) div 2) * 1000000"
-               " div (sum(sz) * (sum(sz) - 1) div 2) AS BIGINT)")
-        .alias("connectivity_e6"))
-
-
-_SESSION_STATS_SQL = """
-WITH flagged AS (
-  SELECT user_id, ts, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                   OR epoch(ts) - epoch(lag(ts) OVER w) > 1800
-              THEN 1 ELSE 0 END AS new_session
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sess AS (
-  SELECT user_id, ts,
-         sum(new_session) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS sid
-  FROM flagged
-), per AS (
-  SELECT user_id, sid, CAST(count(*) AS HUGEINT) AS n_ev,
-         CAST(epoch_us(max(ts)) // 1000000
-              - epoch_us(min(ts)) // 1000000 AS HUGEINT) AS dur_s
-  FROM sess GROUP BY 1, 2
-)
-SELECT CAST(least(n_ev, 5) AS INTEGER) AS events_bucket,
-       CAST(count(*) AS BIGINT) AS n_sessions,
-       CAST(sum(dur_s) AS BIGINT) AS total_secs,
-       CAST(sum(dur_s) * 1000000 // count(*) AS BIGINT) AS avg_dur_e6
-FROM per GROUP BY 1
-"""
-
-
-@register("q_events_session_stats", _SESSION_STATS_SQL)
-def q_events_session_stats(spark, sf_dir):
-    """Session-shape distribution (30-minute-gap rule): sessions bucketed
-    by event count (1, 2, 3, 4, 5+) with exact average duration per
-    bucket — the engagement-depth histogram that complements
-    q_events_sessionize (per-user counts) and q_events_session_paths
-    (content): single-event bounce share falls straight out of bucket 1.
-    One user_id shuffle shared by the two chained windows, then a
-    5-bucket aggregate."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    new_s = F.when(prev.isNull()
-                   | ((F.unix_timestamp("ts") - F.unix_timestamp(prev))
-                      > 1800), 1).otherwise(0)
-    sess = (e.withColumn("new_session", new_s)
-            .withColumn("sid", F.sum("new_session").over(
-                w.rowsBetween(Window.unboundedPreceding, 0))))
-    per = (sess.groupBy("user_id", "sid")
-           .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n_ev"),
-                (F.expr("unix_micros(cast(max(ts) as timestamp))"
-                        " div 1000000")
-                 - F.expr("unix_micros(cast(min(ts) as timestamp))"
-                          " div 1000000")).cast("decimal(38,0)")
-                .alias("dur_s")))
-    return (per.groupBy(F.least(F.col("n_ev"), F.lit(5)).cast("int")
-                        .alias("events_bucket"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_sessions"),
-                 F.sum("dur_s").cast("long").alias("total_secs"),
-                 F.expr("CAST(sum(dur_s) * 1000000 div count(1) AS BIGINT)")
-                 .alias("avg_dur_e6")))
-
-
-_PCHART_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS HUGEINT) AS n,
-         CAST(count(*) FILTER (WHERE event_type = 'error') AS HUGEINT) AS x
-  FROM events GROUP BY 1
-), tot AS (SELECT sum(n) AS tn, sum(x) AS tx FROM daily)
-SELECT d AS day, CAST(n AS BIGINT) AS n_events,
-       CAST(x AS BIGINT) AS n_errors,
-       CAST(x * 1000000 // n AS BIGINT) AS rate_e6,
-       CAST(tx * 1000000 // tn AS BIGINT) AS center_e6,
-       round((CAST(tx AS DOUBLE) / tn)
-             + 3.0 * sqrt(((CAST(tx AS DOUBLE) / tn)
-                           * (1.0 - (CAST(tx AS DOUBLE) / tn)))
-                          / CAST(n AS DOUBLE)), 6) AS ucl,
-       round(greatest((CAST(tx AS DOUBLE) / tn)
-             - 3.0 * sqrt(((CAST(tx AS DOUBLE) / tn)
-                           * (1.0 - (CAST(tx AS DOUBLE) / tn)))
-                          / CAST(n AS DOUBLE)), 0.0), 6) AS lcl,
-       CAST(CASE WHEN (CAST(x AS DOUBLE) / n)
-                      > (CAST(tx AS DOUBLE) / tn)
-                        + 3.0 * sqrt(((CAST(tx AS DOUBLE) / tn)
-                                      * (1.0 - (CAST(tx AS DOUBLE) / tn)))
-                                     / CAST(n AS DOUBLE))
-                 OR (CAST(x AS DOUBLE) / n)
-                    < greatest((CAST(tx AS DOUBLE) / tn)
-                      - 3.0 * sqrt(((CAST(tx AS DOUBLE) / tn)
-                                    * (1.0 - (CAST(tx AS DOUBLE) / tn)))
-                                   / CAST(n AS DOUBLE)), 0.0)
-                 THEN 1 ELSE 0 END AS INTEGER) AS out_of_control
-FROM daily CROSS JOIN tot
-"""
-
-
-@register("q_events_pchart", _PCHART_SQL)
-def q_events_pchart(spark, sf_dir):
-    """Statistical process control p-chart on the daily error rate:
-    per-day rate against the overall center line with ±3σ binomial
-    control limits √(p̄(1−p̄)/n_d), out-of-control days flagged — the
-    monitoring chart that separates common-cause noise from a real
-    regression, sized correctly for unequal daily volumes (limits widen
-    on quiet days). Rates and the center are exact e6 integers; the
-    limits use sqrt/division on identical doubles derived from exact
-    integer totals (IEEE-exact, the q_events_jackknife_se discipline),
-    and the flag compares the same two doubles on both engines. One
-    daily aggregate + a broadcast 1-row total."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-                  F.sum((F.col("event_type") == "error").cast("int"))
-                  .cast("decimal(38,0)").alias("x")))
-    tot = daily.agg(F.sum("n").alias("tn"), F.sum("x").alias("tx"))
-    j = daily.crossJoin(F.broadcast(tot))
-    pbar = "(CAST(tx AS DOUBLE) / tn)"
-    sig = (f"sqrt(({pbar} * (1.0 - {pbar})) / CAST(n AS DOUBLE))")
-    return j.select(
-        F.col("d").alias("day"),
-        F.col("n").cast("long").alias("n_events"),
-        F.col("x").cast("long").alias("n_errors"),
-        F.expr("CAST(x * 1000000 div n AS BIGINT)").alias("rate_e6"),
-        F.expr("CAST(tx * 1000000 div tn AS BIGINT)").alias("center_e6"),
-        F.expr(f"round({pbar} + 3.0 * {sig}, 6)").alias("ucl"),
-        F.expr(f"round(greatest({pbar} - 3.0 * {sig}, 0.0), 6)")
-        .alias("lcl"),
-        F.expr(f"CAST(CASE WHEN (CAST(x AS DOUBLE) / n)"
-               f" > {pbar} + 3.0 * {sig}"
-               f" OR (CAST(x AS DOUBLE) / n)"
-               f" < greatest({pbar} - 3.0 * {sig}, 0.0)"
-               f" THEN 1 ELSE 0 END AS INT)").alias("out_of_control"))
-
-
-_KWIC_SQL = """
-WITH w AS (
-  SELECT doc_id, string_split(text, ' ') AS ws FROM documents
-), hit AS (
-  SELECT doc_id, ws, list_position(ws, 'vector') AS p
-  FROM w WHERE list_position(ws, 'vector') IS NOT NULL
-     AND list_position(ws, 'vector') > 0
-)
-SELECT doc_id, CAST(p AS INTEGER) AS pos,
-       array_to_string(ws[greatest(p - 3, 1):p + 3], ' ') AS snippet
-FROM hit
-"""
-
-
-@register("search_kwic_snippets", _KWIC_SQL)
-def search_kwic_snippets(spark, sf_dir):
-    """KWIC (keyword-in-context) snippet generation for the query term
-    'vector': first-occurrence position plus a ±3-token window joined
-    back to a display string — what a search UI renders under each
-    BM25 hit (search_bm25 ranks; this excerpts). Pure array expressions
-    (array_position + slice) on the tokenized doc — no postings join, no
-    explode: snippeting is a map-side operation over the hit set at any
-    scale."""
-    d = _t(spark, sf_dir, "documents")
-    ws = F.split("text", " ")
-    hit = (d.select("doc_id", ws.alias("ws"),
-                    F.array_position(ws, "vector").alias("p"))
-           .filter(F.col("p") > 0))
-    start = F.greatest(F.col("p") - 3, F.lit(1))
-    length = (F.col("p") + 3 - start + 1).cast("int")
-    return hit.select(
-        "doc_id", F.col("p").cast("int").alias("pos"),
-        F.array_join(F.slice("ws", start, length), " ").alias("snippet"))
-
-
-_CUPED_SQL = """
-WITH bounds AS (
-  SELECT (epoch_us(min(ts)) + epoch_us(max(ts))) // 2 AS mid_us
-  FROM events
-), per_user AS (
-  SELECT e.user_id, CAST(e.user_id % 2 AS INTEGER) AS arm,
-         CAST(count(*) FILTER (WHERE epoch_us(e.ts) < b.mid_us)
-              AS HUGEINT) AS x,
-         CAST(coalesce(sum(CAST(floor(e."value" * 100 + 0.5) AS HUGEINT))
-              FILTER (WHERE epoch_us(e.ts) >= b.mid_us), 0) AS HUGEINT) AS y
-  FROM events e CROSS JOIN bounds b
-  GROUP BY 1, 2
-), s AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy,
-         sum(x * y) AS sxy, sum(x * x) AS sxx,
-         CAST(count(*) FILTER (WHERE arm = 1) AS HUGEINT) AS n1,
-         CAST(count(*) FILTER (WHERE arm = 0) AS HUGEINT) AS n0,
-         sum(x) FILTER (WHERE arm = 1) AS sx1,
-         sum(x) FILTER (WHERE arm = 0) AS sx0,
-         sum(y) FILTER (WHERE arm = 1) AS sy1,
-         sum(y) FILTER (WHERE arm = 0) AS sy0
-  FROM per_user
-), t AS (
-  SELECT n, n1, n0, sx1, sx0, sy1, sy0,
-         n * sxy - sx * sy AS num, n * sxx - sx * sx AS den
-  FROM s
-)
-SELECT CAST(n AS BIGINT) AS n_users, CAST(n1 AS BIGINT) AS n_arm1,
-       CAST(n0 AS BIGINT) AS n_arm0,
-       CAST(num * 1000000 // den AS BIGINT) AS theta_e6,
-       CAST((sy1 * n0 - sy0 * n1) * 1000000 // (n1 * n0) AS BIGINT)
-           AS raw_lift_e6,
-       CAST(((sy1 * n0 - sy0 * n1) * den - num * (sx1 * n0 - sx0 * n1))
-            * 1000000 // (n1 * n0 * den) AS BIGINT) AS cuped_lift_e6
-FROM t
-"""
-
-
-@register("q_events_cuped_lift", _CUPED_SQL)
-def q_events_cuped_lift(spark, sf_dir):
-    """CUPED variance-reduced experiment readout (Deng et al., WSDM'13 —
-    the industry-standard pre-experiment covariate adjustment): split the
-    time range in half, covariate X = user's PRE-period event count,
-    metric Y = POST-period spend (exact cents), θ = cov(X,Y)/var(X)
-    pooled, adjusted lift = (Ȳ₁−Ȳ₀) − θ(X̄₁−X̄₀). Every mean difference
-    and θ is carried as an exact integer RATIONAL (cross-multiplied:
-    (Σy₁n₀−Σy₀n₁)·den − num·(Σx₁n₀−Σx₀n₁) over n₁n₀·den) — no float θ
-    ever multiplies a float mean, so the adjustment is hash-exact. One
-    user aggregate + one 1-row stats aggregate. Exact while n²·Σx²·Σy·10⁶
-    < 10³⁸ (≈10⁶ users/slice at these magnitudes; shard the readout by
-    segment beyond that, as experimentation platforms do anyway)."""
-    e = _t(spark, sf_dir, "events")
-    b = e.agg(F.min("ts").alias("t0"), F.max("ts").alias("t1")).select(
-        F.expr("(unix_micros(cast(t0 as timestamp))"
-               " + unix_micros(cast(t1 as timestamp))) div 2").alias("mid_us"))
-    cents = F.floor(F.col("value") * 100 + F.lit(0.5))
-    ts_us = F.expr("unix_micros(cast(ts as timestamp))")
-    pu = (e.crossJoin(F.broadcast(b))
-          .groupBy("user_id", (F.col("user_id") % 2).cast("int")
-                   .alias("arm"))
-          .agg(F.sum((ts_us < F.col("mid_us")).cast("int"))
-               .cast("decimal(38,0)").alias("x"),
-               F.coalesce(F.sum(F.when(ts_us >= F.col("mid_us"), cents)),
-                          F.lit(0)).cast("decimal(38,0)").alias("y")))
-    s = pu.agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-        F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum((F.col("arm") == 1).cast("int")).cast("decimal(38,0)")
-        .alias("n1"),
-        F.sum((F.col("arm") == 0).cast("int")).cast("decimal(38,0)")
-        .alias("n0"),
-        F.sum(F.when(F.col("arm") == 1, F.col("x")).otherwise(0))
-        .alias("sx1"),
-        F.sum(F.when(F.col("arm") == 0, F.col("x")).otherwise(0))
-        .alias("sx0"),
-        F.sum(F.when(F.col("arm") == 1, F.col("y")).otherwise(0))
-        .alias("sy1"),
-        F.sum(F.when(F.col("arm") == 0, F.col("y")).otherwise(0))
-        .alias("sy0"))
-    t = s.withColumn("num", F.expr("n * sxy - sx * sy")) \
-         .withColumn("den", F.expr("n * sxx - sx * sx"))
-    return t.select(
-        F.col("n").cast("long").alias("n_users"),
-        F.col("n1").cast("long").alias("n_arm1"),
-        F.col("n0").cast("long").alias("n_arm0"),
-        F.expr("CAST(num * 1000000 div den AS BIGINT)").alias("theta_e6"),
-        F.expr("CAST((sy1 * n0 - sy0 * n1) * 1000000 div (n1 * n0)"
-               " AS BIGINT)").alias("raw_lift_e6"),
-        F.expr("CAST(((sy1 * n0 - sy0 * n1) * den"
-               " - num * (sx1 * n0 - sx0 * n1)) * 1000000"
-               " div (n1 * n0 * den) AS BIGINT)").alias("cuped_lift_e6"))
-
-
-_QTE_SQL = """
-WITH v AS (
-  SELECT CAST(user_id % 2 AS INTEGER) AS arm,
-         CAST(floor("value" * 100 + 0.5) AS BIGINT) AS cents
-  FROM events
-), q AS (
-  SELECT arm,
-         CAST(quantile_disc(cents, 0.25) AS BIGINT) AS p25,
-         CAST(quantile_disc(cents, 0.5) AS BIGINT) AS p50,
-         CAST(quantile_disc(cents, 0.75) AS BIGINT) AS p75,
-         CAST(quantile_disc(cents, 0.9) AS BIGINT) AS p90
-  FROM v GROUP BY 1
-)
-SELECT a.p25 - b.p25 AS qte_p25, a.p50 - b.p50 AS qte_p50,
-       a.p75 - b.p75 AS qte_p75, a.p90 - b.p90 AS qte_p90,
-       a.p50 AS arm1_p50, b.p50 AS arm0_p50
-FROM q a JOIN q b ON a.arm = 1 AND b.arm = 0
-"""
-
-
-@register("q_events_qte", _QTE_SQL)
-def q_events_qte(spark, sf_dir):
-    """Quantile treatment effects: per-arm discontinuous quartiles/p90 of
-    event value (exact cents) and their differences — where a mean lift
-    (q_events_abtest_lift) hides WHICH part of the distribution moved,
-    QTE shows whether the treatment lifted the median user or only the
-    tail. Type-1 percentiles via the rank-window + conditional-min
-    pattern (q_events_percentile_disc), partitioned by arm; one ranked
-    window per arm over value rows, one 2-row join."""
-    e = _t(spark, sf_dir, "events")
-    v = e.select((F.col("user_id") % 2).cast("int").alias("arm"),
-                 F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
-                 .alias("cents"))
-    w = Window.partitionBy("arm").orderBy("cents")
-    ranked = (v.select("arm", "cents",
-                       F.row_number().over(w).alias("rn"))
-              .withColumn("n", F.count(F.lit(1)).over(
-                  Window.partitionBy("arm"))))
-
-    def disc(p):
-        return F.min(F.when(F.col("rn") >= F.ceil(F.lit(p) * F.col("n")),
-                            F.col("cents")))
-
-    q = (ranked.groupBy("arm")
-         .agg(disc(0.25).cast("long").alias("p25"),
-              disc(0.5).cast("long").alias("p50"),
-              disc(0.75).cast("long").alias("p75"),
-              disc(0.9).cast("long").alias("p90")))
-    a = q.filter(F.col("arm") == 1).select(
-        F.col("p25").alias("a25"), F.col("p50").alias("a50"),
-        F.col("p75").alias("a75"), F.col("p90").alias("a90"))
-    bq = q.filter(F.col("arm") == 0).select(
-        F.col("p25").alias("b25"), F.col("p50").alias("b50"),
-        F.col("p75").alias("b75"), F.col("p90").alias("b90"))
-    return (a.crossJoin(bq)
-            .select((F.col("a25") - F.col("b25")).alias("qte_p25"),
-                    (F.col("a50") - F.col("b50")).alias("qte_p50"),
-                    (F.col("a75") - F.col("b75")).alias("qte_p75"),
-                    (F.col("a90") - F.col("b90")).alias("qte_p90"),
-                    F.col("a50").alias("arm1_p50"),
-                    F.col("b50").alias("arm0_p50")))
 
 
 _CURRICULUM_SQL = """
@@ -15348,545 +6422,6 @@ def data_curriculum_phases(spark, sf_dir):
                  F.max("tok").cast("long").alias("max_tokens")))
 
 
-_SEASONAL_DECOMP_SQL = """
-WITH m AS (
-  SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month,
-         CAST(sum(CAST(floor(o_totalprice * 100 + 0.5) AS HUGEINT))
-              AS HUGEINT) AS rev
-  FROM orders GROUP BY 1
-), w AS (
-  SELECT month, rev,
-         sum(rev) OVER (ORDER BY month
-           ROWS BETWEEN 6 PRECEDING AND 5 FOLLOWING)
-         + sum(rev) OVER (ORDER BY month
-           ROWS BETWEEN 5 PRECEDING AND 6 FOLLOWING) AS trend24,
-         row_number() OVER (ORDER BY month) AS rn,
-         count(*) OVER () AS n
-  FROM m
-), full_w AS (
-  SELECT month, rev, trend24, 24 * rev - trend24 AS detr24
-  FROM w WHERE rn > 6 AND rn <= n - 6
-), seas AS (
-  SELECT month(month) AS moy, sum(detr24) AS s_num,
-         CAST(count(*) AS HUGEINT) AS s_den
-  FROM full_w GROUP BY 1
-)
-SELECT f.month, CAST(f.rev AS BIGINT) AS rev_cents,
-       CAST(f.trend24 * 1000000 // 24 AS BIGINT) AS trend_e6,
-       CAST(s.s_num * 1000000 // (24 * s.s_den) AS BIGINT) AS seasonal_e6,
-       CAST(f.rev * 1000000 - f.trend24 * 1000000 // 24
-            - s.s_num * 1000000 // (24 * s.s_den) AS BIGINT)
-           AS residual_e6
-FROM full_w f JOIN seas s ON s.moy = month(f.month)
-"""
-
-
-@register("q_orders_seasonal_decomposition", _SEASONAL_DECOMP_SQL)
-def q_orders_seasonal_decomposition(spark, sf_dir):
-    """Classical additive seasonal decomposition of monthly revenue:
-    trend = centered 12-month moving average (the textbook half-weight
-    ends, carried as 24·MA so it stays an exact integer — two
-    12-row window sums, never a fractional weight), seasonal = per
-    month-of-year mean of the detrended series (exact rational → e6),
-    residual = remainder, so the three components sum to rev·10⁶ by
-    construction. The decomposition behind 'is December big or is the
-    business growing'. Windows run over MONTHS (a ~100-row series);
-    months without a full ±6 window are excluded, as the classical
-    method requires."""
-    o = _t(spark, sf_dir, "orders")
-    m = (o.groupBy(F.date_trunc("month", "o_orderdate").cast("date")
-                   .alias("month"))
-         .agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-                    .cast("decimal(38,0)")).alias("rev")))
-    wo = Window.orderBy("month")
-    w = m.select(
-        "month", "rev",
-        (F.sum("rev").over(wo.rowsBetween(-6, 5))
-         + F.sum("rev").over(wo.rowsBetween(-5, 6))).alias("trend24"),
-        F.row_number().over(wo).alias("rn"),
-        F.count(F.lit(1)).over(Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("n"))
-    full_w = (w.filter((F.col("rn") > 6) & (F.col("rn") <= F.col("n") - 6))
-              .select("month", "rev", "trend24",
-                      (F.lit(24) * F.col("rev") - F.col("trend24"))
-                      .alias("detr24")))
-    seas = (full_w.groupBy(F.month("month").alias("moy"))
-            .agg(F.sum("detr24").alias("s_num"),
-                 F.count(F.lit(1)).cast("decimal(38,0)").alias("s_den")))
-    return (full_w.join(F.broadcast(seas),
-                        F.month(full_w.month) == seas.moy)
-            .select(full_w.month.alias("month"),
-                    F.col("rev").cast("long").alias("rev_cents"),
-                    F.expr("CAST(trend24 * 1000000 div 24 AS BIGINT)")
-                    .alias("trend_e6"),
-                    F.expr("CAST(s_num * 1000000 div (24 * s_den)"
-                           " AS BIGINT)").alias("seasonal_e6"),
-                    F.expr("CAST(rev * 1000000 - trend24 * 1000000 div 24"
-                           " - s_num * 1000000 div (24 * s_den) AS BIGINT)")
-                    .alias("residual_e6")))
-
-
-_DEBOUNCE_SQL = """
-WITH g AS (
-  SELECT event_type,
-         epoch_us(ts) // 1000000
-           - epoch_us(lag(ts) OVER (PARTITION BY user_id, event_type
-                                    ORDER BY ts, event_id)) // 1000000
-             AS gap
-  FROM events
-)
-SELECT event_type, CAST(count(*) AS BIGINT) AS n_total,
-       CAST(sum(CASE WHEN gap IS NULL OR gap > 60 THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_kept,
-       CAST(sum(CASE WHEN gap IS NOT NULL AND gap <= 60 THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_collapsed,
-       CAST(sum(CASE WHEN gap IS NOT NULL AND gap <= 60 THEN 1 ELSE 0 END)
-            * 1000000 // count(*) AS BIGINT) AS collapse_rate_e6
-FROM g GROUP BY 1
-"""
-
-
-@register("q_events_debounce", _DEBOUNCE_SQL)
-def q_events_debounce(spark, sf_dir):
-    """Debounce/throttle audit: per event type, how many events a
-    60-second same-(user, type) debounce rule would collapse (double
-    clicks, retry storms, log duplicates) vs keep — the dedup-adjacent
-    stream hygiene number that sizes an ingestion throttle before it
-    ships. One lag window partitioned by the natural (user, type) key,
-    exact e6 collapse rate."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    g = e.select(
-        "event_type",
-        (F.expr("unix_micros(cast(ts as timestamp)) div 1000000")
-         - F.expr("unix_micros(cast(lag(ts) over (partition by user_id,"
-                  " event_type order by ts, event_id) as timestamp))"
-                  " div 1000000")).alias("gap"))
-    kept = (F.col("gap").isNull() | (F.col("gap") > 60)).cast("int")
-    coll = (F.col("gap").isNotNull() & (F.col("gap") <= 60)).cast("int")
-    return (g.groupBy("event_type")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_total"),
-                 F.sum(kept).cast("long").alias("n_kept"),
-                 F.sum(coll).cast("long").alias("n_collapsed"),
-                 F.expr("CAST(sum(CASE WHEN gap IS NOT NULL AND gap <= 60"
-                        " THEN 1 ELSE 0 END) * 1000000 div count(1)"
-                        " AS BIGINT)").alias("collapse_rate_e6")))
-
-
-_HOLT_SQL = """
-WITH RECURSIVE daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS HUGEINT) AS y
-  FROM events GROUP BY 1
-), idx AS (
-  SELECT d, y, row_number() OVER (ORDER BY d) - 1 AS ix FROM daily
-), holt AS (
-  SELECT x0.ix, x0.d, x0.y,
-         x0.y * 1000000 AS l,
-         (SELECT (y2.y - x0.y) * 1000000 FROM idx y2 WHERE y2.ix = 1) AS b,
-         CAST(NULL AS HUGEINT) AS fitted
-  FROM idx x0 WHERE x0.ix = 0
-  UNION ALL
-  SELECT nx.ix, nx.d, nx.y,
-         (2 * nx.y * 1000000 + 8 * (h.l + h.b)) // 10,
-         (2 * ((2 * nx.y * 1000000 + 8 * (h.l + h.b)) // 10 - h.l)
-          + 8 * h.b) // 10,
-         h.l + h.b
-  FROM holt h JOIN idx nx ON nx.ix = h.ix + 1
-)
-SELECT d AS day, CAST(y AS BIGINT) AS n_events,
-       CAST(l AS BIGINT) AS level_e6, CAST(b AS BIGINT) AS trend_e6,
-       CAST(fitted AS BIGINT) AS fitted_e6
-FROM holt
-"""
-
-
-@register("q_events_holt_forecast", _HOLT_SQL)
-def q_events_holt_forecast(spark, sf_dir):
-    """Holt double-exponential smoothing over the daily-volume series
-    (α=β=0.2 as the exact fixed-point recurrence l←(2y+8(l+b)) div 10,
-    b←(2Δl+8b) div 10, all e6 integers, div truncating toward zero on
-    both engines): per-day level, trend, and the one-step-ahead fitted
-    value — the forecasting layer above q_events_forecast_backtest's
-    naive baseline. The recursion is inherently sequential over the DAILY
-    AGGREGATE (≈30 rows): the oracle runs it as a recursive CTE; the
-    engine reduces the scan distributively, collects only the bounded
-    series, recurses exactly in the driver (the BPE vocabulary-bounded
-    discipline), and re-parallelizes the result."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast("long").alias("y"))
-             .orderBy("d"))
-    rows = daily.collect()
-
-    def tdiv(a: int, b: int) -> int:
-        q = abs(a) // abs(b)
-        return -q if (a < 0) != (b < 0) else q
-
-    out = []
-    l = b = 0
-    for i, r in enumerate(rows):
-        y = int(r["y"])
-        if i == 0:
-            l = y * 1_000_000
-            b = (int(rows[1]["y"]) - y) * 1_000_000 if len(rows) > 1 else 0
-            out.append((r["d"], y, l, b, None))
-        else:
-            fitted = l + b
-            nl = tdiv(2 * y * 1_000_000 + 8 * (l + b), 10)
-            b = tdiv(2 * (nl - l) + 8 * b, 10)
-            l = nl
-            out.append((r["d"], y, l, b, fitted))
-    return spark.createDataFrame(
-        out, "day date, n_events long, level_e6 long, trend_e6 long,"
-             " fitted_e6 long")
-
-
-_RAKE_STOPWORDS = ("the", "a", "of", "to", "and", "is", "in", "that")
-
-_RAKE_SQL = f"""
-WITH tok AS (
-  SELECT doc_id, u.pos AS pos, u.w AS w
-  FROM (SELECT doc_id,
-               unnest([{{'pos': i, 'w': ws[i]}}
-                       FOR i IN range(1, len(ws) + 1)]) AS u
-        FROM (SELECT doc_id, string_split(text, ' ') AS ws
-              FROM documents))
-  WHERE u.w <> ''
-), content AS (
-  SELECT doc_id, pos, w,
-         pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-  FROM tok
-  WHERE w NOT IN ({', '.join(repr(s) for s in _RAKE_STOPWORDS)})
-), phrases AS (
-  SELECT doc_id, grp,
-         array_to_string(list(w ORDER BY pos), ' ') AS phrase,
-         list(w ORDER BY pos) AS words,
-         count(*) AS plen
-  FROM content GROUP BY 1, 2
-  HAVING count(*) BETWEEN 2 AND 4
-), occur AS (
-  SELECT phrase, unnest(words) AS w, plen FROM phrases
-), wstats AS (
-  SELECT w, CAST(sum(plen) AS HUGEINT) AS deg,
-         CAST(count(*) AS HUGEINT) AS freq
-  FROM occur GROUP BY 1
-), cnt AS (
-  SELECT phrase, CAST(count(*) AS BIGINT) AS n_occurrences FROM phrases
-  GROUP BY 1
-), scored AS (
-  SELECT o.phrase,
-         CAST(sum(ws.deg * 1000000 // ws.freq)
-              // max(c.n_occurrences) AS BIGINT) AS score_e6,
-         CAST(count(*) // max(c.n_occurrences) AS BIGINT) AS n_words
-  FROM occur o JOIN wstats ws ON ws.w = o.w
-  JOIN cnt c ON c.phrase = o.phrase
-  GROUP BY o.phrase
-)
-SELECT s.phrase, s.score_e6, c.n_occurrences,
-       CAST(rank AS INTEGER) AS rank
-FROM (SELECT *, row_number() OVER (ORDER BY score_e6 DESC, phrase) AS rank
-      FROM scored) s JOIN cnt c USING (phrase)
-WHERE rank <= 15
-"""
-
-
-@register("text_rake_keywords", _RAKE_SQL)
-def text_rake_keywords(spark, sf_dir):
-    """RAKE keyword extraction (Rose et al. 2010 — the stopword-delimited
-    complement to text_textrank_keywords's graph ranking): candidate
-    phrases are maximal stopword-free runs of 2-4 tokens (island grouping:
-    pos − rank over content tokens), each word scores deg/freq (deg =
-    Σ phrase-length over its occurrences), a phrase TYPE scores the sum of its
-    words' ratios (the per-occurrence sums are identical, so the
-    occurrence-sum divides back out exactly) — every ratio floored at e6
-    BEFORE summing, so the score is an exact integer on both engines. Top-15 phrases. One
-    posexplode + two vocabulary-bounded aggregates; phrase assembly is
-    order-pinned (list(... ORDER BY pos) / sorted collect)."""
-    d = _t(spark, sf_dir, "documents")
-    tok = (d.select("doc_id", F.posexplode(F.split("text", " "))
-                    .alias("pos", "w"))
-           .filter(F.col("w") != ""))
-    content = (tok.filter(~F.col("w").isin(*_RAKE_STOPWORDS))
-               .withColumn("grp", F.col("pos") - F.row_number().over(
-                   Window.partitionBy("doc_id").orderBy("pos"))))
-    phrases = (content.groupBy("doc_id", "grp")
-               .agg(F.array_join(
-                       F.transform(F.array_sort(F.collect_list(
-                           F.struct("pos", "w"))), lambda s: s.w), " ")
-                    .alias("phrase"),
-                    F.transform(F.array_sort(F.collect_list(
-                        F.struct("pos", "w"))), lambda s: s.w)
-                    .alias("words"),
-                    F.count(F.lit(1)).alias("plen"))
-               .filter((F.col("plen") >= 2) & (F.col("plen") <= 4)))
-    occur = phrases.select("phrase", F.explode("words").alias("w"), "plen")
-    wstats = occur.groupBy("w").agg(
-        F.sum("plen").cast("decimal(38,0)").alias("deg"),
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("freq"))
-    cnt = phrases.groupBy("phrase").agg(
-        F.count(F.lit(1)).cast("long").alias("n_occurrences"))
-    scored = (occur.join(wstats, "w").join(cnt, "phrase")
-              .groupBy("phrase")
-              .agg(F.expr("CAST(sum(deg * 1000000 div freq)"
-                          " div max(n_occurrences) AS BIGINT)")
-                   .alias("score_e6"),
-                   F.expr("CAST(count(1) div max(n_occurrences) AS BIGINT)")
-                   .alias("n_words")))
-    w = Window.orderBy(F.col("score_e6").desc(), "phrase")
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 15)
-            .join(cnt, "phrase")
-            .select("phrase", "score_e6", "n_occurrences",
-                    F.col("rank").cast("int").alias("rank")))
-
-
-_RETENTION_HALFLIFE_SQL = """
-WITH fw AS (
-  SELECT user_id,
-         min(CAST(date_trunc('week', CAST(ts AS DATE)) AS DATE)) AS cohort
-  FROM events GROUP BY 1
-), act AS (
-  SELECT DISTINCT e.user_id,
-         (CAST(date_trunc('week', CAST(e.ts AS DATE)) AS DATE)
-          - fw.cohort) // 7 AS offset_wk
-  FROM events e JOIN fw USING (user_id)
-), base AS (SELECT CAST(count(*) AS HUGEINT) AS n0 FROM fw),
-r AS (
-  SELECT offset_wk, CAST(count(*) AS HUGEINT) AS active,
-         CAST(count(*) AS HUGEINT) * 1000000 // (SELECT n0 FROM base)
-             AS rate_e6
-  FROM act WHERE offset_wk >= 1 GROUP BY 1
-), pts AS (
-  SELECT CAST(offset_wk AS HUGEINT) AS x,
-         CAST(floor(ln(CAST(rate_e6 AS DOUBLE) / 1000000.0) * 1000000
-                    + 0.5) AS HUGEINT) AS y,
-         active, rate_e6
-  FROM r WHERE rate_e6 > 0
-), s AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy,
-         sum(x * y) AS sxy, sum(x * x) AS sxx
-  FROM pts
-)
-SELECT CAST(n AS BIGINT) AS n_points,
-       CAST((n * sxy - sx * sy) * 1000000 // (n * sxx - sx * sx) AS BIGINT)
-           AS slope_e6,
-       CAST(CASE WHEN n * sxy - sx * sy < 0 THEN
-            693147 * (n * sxx - sx * sx) * 1000
-            // (-(n * sxy - sx * sy)) ELSE NULL END AS BIGINT)
-           AS halflife_weeks_e3
-FROM s
-"""
-
-
-@register("q_events_retention_halflife", _RETENTION_HALFLIFE_SQL)
-def q_events_retention_halflife(spark, sf_dir):
-    """Retention half-life: fit log(retention rate) vs week offset by
-    exact-integer OLS (each ln fixed to e6 immediately — the
-    q_events_powerlaw_fit discipline, no float sums) and convert the
-    decay slope to a half-life, ln2 as the e6 literal 693147 (floor
-    disclosed): halflife = ln2/(−slope), emitted in milli-weeks by
-    integer cross-division. Turns q_events_cohort_retention's CURVE into
-    the single number a growth model consumes. Two aggregates over the
-    distinct (user, week) table; the regression runs on ≤ |weeks|
-    points."""
-    e = _t(spark, sf_dir, "events")
-    wk = F.date_trunc("week", F.col("ts").cast("date")).cast("date")
-    u = e.select("user_id", wk.alias("wk")).distinct()
-    fw = u.groupBy("user_id").agg(F.min("wk").alias("cohort"))
-    act = (u.join(fw, "user_id")
-           .select("user_id", (F.datediff("wk", "cohort") / 7).cast("long")
-                   .alias("offset_wk")).distinct())
-    base = fw.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n0"))
-    r = (act.filter(F.col("offset_wk") >= 1)
-         .groupBy("offset_wk")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("active"))
-         .crossJoin(F.broadcast(base))
-         .withColumn("rate_e6", F.expr("active * 1000000 div n0")))
-    pts = (r.filter(F.col("rate_e6") > 0)
-           .select(F.col("offset_wk").cast("decimal(38,0)").alias("x"),
-                   F.floor(F.log(F.col("rate_e6").cast("double")
-                                 / F.lit(1000000.0)) * 1000000
-                           + F.lit(0.5)).cast("decimal(38,0)").alias("y")))
-    s = pts.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-                F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-                F.sum(F.col("x") * F.col("y")).alias("sxy"),
-                F.sum(F.col("x") * F.col("x")).alias("sxx"))
-    return s.select(
-        F.col("n").cast("long").alias("n_points"),
-        F.expr("CAST((n * sxy - sx * sy) * 1000000"
-               " div (n * sxx - sx * sx) AS BIGINT)").alias("slope_e6"),
-        F.expr("CAST(CASE WHEN n * sxy - sx * sy < 0 THEN"
-               " 693147 * (n * sxx - sx * sx) * 1000"
-               " div (-(n * sxy - sx * sy)) ELSE NULL END AS BIGINT)")
-        .alias("halflife_weeks_e3"))
-
-
-def _ico_fixture_sql(n: int = 18, seed: int = 42) -> str:
-    """Oracle for ICO directory extraction: the same formula entry list
-    the fixture encoder uses (sources/multimodal.ico_fixture_entries),
-    with bytes_in_res recomputed from the same payload builders — pure
-    shared-formula VALUES, the multimodal-fixture discipline."""
-    from .sources.multimodal import (_ico_bmp_image, _ico_png_image,
-                                     ico_fixture_entries)
-    rows = []
-    for i in range(n):
-        for e, (w, h, bpp, kind) in enumerate(ico_fixture_entries(i, seed)):
-            img = (_ico_png_image(w, h) if kind == "png"
-                   else _ico_bmp_image(w, h, bpp))
-            rows.append(f"({i}, {e}, {w}, {h}, {bpp}, '{kind}', {len(img)})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(entry AS INTEGER) AS entry,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(bpp AS INTEGER) AS bpp, kind,"
-            f" CAST(bytes_in_res AS BIGINT) AS bytes_in_res"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, entry, width, height, bpp, kind, bytes_in_res)")
-
-
-@register("multimodal_ico_entries", _ico_fixture_sql())
-def multimodal_ico_entries(spark, sf_dir):
-    """ICO (favicon/icon-bundle) directory extraction: a REAL ICONDIR +
-    ICONDIRENTRY walk with payload sniffing — PNG entries read dims from
-    IHDR (overriding the 1-byte directory fields, which is how >255px
-    icons are stored), BMP entries halve the ICO-convention doubled
-    biHeight (sources/multimodal.parse_ico). One mapInPandas row per
-    icon entry; joins the PNG/GIF/JPEG/BMP/TIFF/WEBP/WAV/MP4/PDF/EPUB
-    codec set as the web-crawl favicon path."""
-    from .sources.multimodal import extract_ico_entries, synthetic_ico_media
-    return extract_ico_entries(synthetic_ico_media(spark, 18))
-
-
-_BULLWHIP_SQL = """
-WITH om AS (
-  SELECT CAST(date_trunc('month', o.o_orderdate) AS DATE) AS m,
-         CAST(sum(CAST(l.l_quantity AS HUGEINT)) AS HUGEINT) AS q
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-  GROUP BY 1
-), sm AS (
-  SELECT CAST(date_trunc('month', CAST(l_shipdate AS DATE)) AS DATE) AS m,
-         CAST(sum(CAST(l_quantity AS HUGEINT)) AS HUGEINT) AS q
-  FROM lineitem GROUP BY 1
-), j AS (
-  SELECT om.q AS oq, sm.q AS sq FROM om JOIN sm USING (m)
-), s AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(oq) AS so, sum(oq * oq) AS so2,
-         sum(sq) AS ss, sum(sq * sq) AS ss2
-  FROM j
-)
-SELECT CAST(n AS BIGINT) AS n_months,
-       CAST(n * so2 - so * so AS BIGINT) AS var_orders_scaled,
-       CAST(n * ss2 - ss * ss AS BIGINT) AS var_ship_scaled,
-       CAST((n * so2 - so * so) * 1000000 // (n * ss2 - ss * ss) AS BIGINT)
-           AS bullwhip_e6
-FROM s
-"""
-
-
-@register("q_orders_bullwhip", _BULLWHIP_SQL)
-def q_orders_bullwhip(spark, sf_dir):
-    """Bullwhip-effect ratio: variance of monthly ORDERED quantity over
-    variance of monthly SHIPPED quantity on the aligned month set — the
-    supply-chain amplification diagnostic (ratio > 1e6 means demand
-    signal variance amplifies upstream of fulfillment). Both variances
-    as exact n·Σq²−(Σq)² integers over the same n (the common factor
-    cancels in the ratio), one e6 integer division. Two monthly
-    aggregates + one tiny month join."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    om = (l.join(o, o.o_orderkey == l.l_orderkey)
-          .groupBy(F.date_trunc("month", "o_orderdate").cast("date")
-                   .alias("m"))
-          .agg(F.sum(F.col("l_quantity").cast("decimal(38,0)"))
-               .alias("oq")))
-    sm = (l.groupBy(F.date_trunc("month", F.col("l_shipdate").cast("date"))
-                    .cast("date").alias("m"))
-          .agg(F.sum(F.col("l_quantity").cast("decimal(38,0)"))
-               .alias("sq")))
-    j = om.join(sm, "m")
-    s = j.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-              F.sum("oq").alias("so"),
-              F.sum(F.col("oq") * F.col("oq")).alias("so2"),
-              F.sum("sq").alias("ss"),
-              F.sum(F.col("sq") * F.col("sq")).alias("ss2"))
-    return s.select(
-        F.col("n").cast("long").alias("n_months"),
-        F.expr("CAST(n * so2 - so * so AS BIGINT)")
-        .alias("var_orders_scaled"),
-        F.expr("CAST(n * ss2 - ss * ss AS BIGINT)").alias("var_ship_scaled"),
-        F.expr("CAST((n * so2 - so * so) * 1000000"
-               " div (n * ss2 - ss * ss) AS BIGINT)").alias("bullwhip_e6"))
-
-
-_FUNNEL_TIMED_SQL = """
-WITH v AS (
-  SELECT user_id, min(ts) AS t_view FROM events
-  WHERE event_type = 'view' GROUP BY 1
-), c AS (
-  SELECT v.user_id, min(e.ts) AS t_click
-  FROM v JOIN events e ON e.user_id = v.user_id
-    AND e.event_type = 'click' AND e.ts > v.t_view
-    AND epoch_us(e.ts) - epoch_us(v.t_view) <= 3600000000
-  GROUP BY 1
-), p AS (
-  SELECT c.user_id
-  FROM c JOIN events e ON e.user_id = c.user_id
-    AND e.event_type = 'purchase' AND e.ts > c.t_click
-    AND epoch_us(e.ts) - epoch_us(c.t_click) <= 3600000000
-  GROUP BY 1
-)
-SELECT CAST((SELECT count(*) FROM v) AS BIGINT) AS n_view,
-       CAST((SELECT count(*) FROM c) AS BIGINT) AS n_click_1h,
-       CAST((SELECT count(*) FROM p) AS BIGINT) AS n_purchase_1h,
-       CAST((SELECT count(*) FROM c) * 1000000
-            // (SELECT count(*) FROM v) AS BIGINT) AS click_rate_e6,
-       CAST((SELECT count(*) FROM p) * 1000000
-            // greatest((SELECT count(*) FROM c), 1) AS BIGINT)
-           AS purchase_rate_e6
-"""
-
-
-@register("q_events_funnel_timed", _FUNNEL_TIMED_SQL)
-def q_events_funnel_timed(spark, sf_dir):
-    """Time-bounded strict funnel: first view → first click WITHIN ONE
-    HOUR of it → purchase within one hour of that click — the funnel
-    q_events_funnel counts without time constraints, re-measured the way
-    a UX team actually defines 'converted in-session'. Stage joins are
-    per-user min-aggregates with a band predicate on the equi-joined
-    user key (never a time-range cross join); exact microsecond bounds
-    on both engines."""
-    e = _t(spark, sf_dir, "events")
-    us = lambda c: F.expr(f"unix_micros(cast({c} as timestamp))")  # noqa: E731
-    v = (e.filter(F.col("event_type") == "view")
-         .groupBy("user_id").agg(F.min("ts").alias("t_view")))
-    clicks = e.filter(F.col("event_type") == "click") \
-        .select("user_id", F.col("ts").alias("tc"))
-    c = (v.join(clicks, "user_id")
-         .filter((F.col("tc") > F.col("t_view"))
-                 & (us("tc") - us("t_view") <= 3600000000))
-         .groupBy("user_id").agg(F.min("tc").alias("t_click")))
-    purch = e.filter(F.col("event_type") == "purchase") \
-        .select("user_id", F.col("ts").alias("tp"))
-    p = (c.join(purch, "user_id")
-         .filter((F.col("tp") > F.col("t_click"))
-                 & (us("tp") - us("t_click") <= 3600000000))
-         .select("user_id").distinct())
-    nv = v.agg(F.count(F.lit(1)).alias("n_view"))
-    nc = c.agg(F.count(F.lit(1)).alias("n_click_1h"))
-    np_ = p.agg(F.count(F.lit(1)).alias("n_purchase_1h"))
-    return (nv.crossJoin(nc).crossJoin(np_)
-            .select(F.col("n_view").cast("long").alias("n_view"),
-                    F.col("n_click_1h").cast("long").alias("n_click_1h"),
-                    F.col("n_purchase_1h").cast("long")
-                    .alias("n_purchase_1h"),
-                    F.expr("CAST(n_click_1h * 1000000 div n_view AS BIGINT)")
-                    .alias("click_rate_e6"),
-                    F.expr("CAST(n_purchase_1h * 1000000"
-                           " div greatest(n_click_1h, 1) AS BIGINT)")
-                    .alias("purchase_rate_e6")))
-
-
 def _pq_distortion_fixture_sql() -> str:
     """PQ-distortion oracle — the same single-process-fixture technique as
     ann_pq_topk (scripts/gen_ivf_fixture.py:pq_distortion_single_process),
@@ -15919,256 +6454,6 @@ def ann_pq_distortion(spark, sf_dir):
     return pq_distortion(embs, m=16, n_codes=16)
 
 
-_SPLIT_SHIPMENTS_SQL = """
-WITH per_order AS (
-  SELECT l_orderkey, CAST(count(DISTINCT l_shipdate) AS HUGEINT) AS n_ship
-  FROM lineitem GROUP BY 1
-), j AS (
-  SELECT CAST(date_trunc('month', o.o_orderdate) AS DATE) AS m,
-         p.n_ship
-  FROM per_order p JOIN orders o ON o.o_orderkey = p.l_orderkey
-)
-SELECT m AS month, CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(CASE WHEN n_ship > 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_split,
-       CAST(sum(CASE WHEN n_ship > 1 THEN 1 ELSE 0 END) * 1000000
-            // count(*) AS BIGINT) AS split_rate_e6,
-       CAST(sum(n_ship) * 1000000 // count(*) AS BIGINT)
-           AS avg_shipments_e6
-FROM j GROUP BY 1
-"""
-
-
-@register("q_orders_split_shipments", _SPLIT_SHIPMENTS_SQL)
-def q_orders_split_shipments(spark, sf_dir):
-    """Split-shipment rate by order month: orders whose lines ship on more
-    than one distinct date (each split is an extra box, pick and freight
-    bill — the fulfillment-efficiency metric next to
-    q_orders_backlog_series). One distinct-count per order, one month
-    aggregate, exact e6 rates."""
-    l = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    per_order = (l.groupBy("l_orderkey")
-                 .agg(F.countDistinct("l_shipdate").cast("decimal(38,0)")
-                      .alias("n_ship")))
-    j = (per_order.join(o, o.o_orderkey == per_order.l_orderkey)
-         .select(F.date_trunc("month", "o_orderdate").cast("date")
-                 .alias("m"), "n_ship"))
-    return (j.groupBy(F.col("m").alias("month"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_orders"),
-                 F.sum((F.col("n_ship") > 1).cast("int")).cast("long")
-                 .alias("n_split"),
-                 F.expr("CAST(sum(CASE WHEN n_ship > 1 THEN 1 ELSE 0 END)"
-                        " * 1000000 div count(1) AS BIGINT)")
-                 .alias("split_rate_e6"),
-                 F.expr("CAST(sum(n_ship) * 1000000 div count(1)"
-                        " AS BIGINT)").alias("avg_shipments_e6")))
-
-
-_DORMANCY_SQL = """
-WITH g AS (
-  SELECT user_id,
-         epoch_us(ts) // 1000000
-           - epoch_us(lag(ts) OVER (PARTITION BY user_id
-                                    ORDER BY ts, event_id)) // 1000000
-             AS gap
-  FROM events
-), d AS (
-  SELECT user_id, CAST(gap AS HUGEINT) AS gap
-  FROM g WHERE gap IS NOT NULL AND gap > 604800
-)
-SELECT CAST(count(*) AS BIGINT) AS n_dormancies,
-       CAST(count(DISTINCT user_id) AS BIGINT) AS n_users,
-       CAST(sum(gap) * 1000000 // (86400 * count(*)) AS BIGINT)
-           AS avg_days_e6,
-       CAST(max(gap) AS BIGINT) AS max_gap_secs,
-       CAST(min(gap) AS BIGINT) AS min_gap_secs
-FROM d
-"""
-
-
-@register("q_events_dormancy", _DORMANCY_SQL)
-def q_events_dormancy(spark, sf_dir):
-    """Dormancy episodes: same-user activity gaps longer than 7 days —
-    how many users go dormant, how long dormancy lasts (exact e6 days) —
-    the reactivation-campaign sizing number that churn (binary, weekly)
-    can't give. One lag window on the user_id shuffle key, one
-    aggregate."""
-    e = _t(spark, sf_dir, "events")
-    g = e.select(
-        "user_id",
-        (F.expr("unix_micros(cast(ts as timestamp)) div 1000000")
-         - F.expr("unix_micros(cast(lag(ts) over (partition by user_id"
-                  " order by ts, event_id) as timestamp)) div 1000000"))
-        .alias("gap"))
-    d = (g.filter(F.col("gap").isNotNull() & (F.col("gap") > 604800))
-         .select("user_id", F.col("gap").cast("decimal(38,0)").alias("gap")))
-    return d.agg(
-        F.count(F.lit(1)).cast("long").alias("n_dormancies"),
-        F.countDistinct("user_id").cast("long").alias("n_users"),
-        F.expr("CAST(sum(gap) * 1000000 div (86400 * count(1)) AS BIGINT)")
-        .alias("avg_days_e6"),
-        F.max("gap").cast("long").alias("max_gap_secs"),
-        F.min("gap").cast("long").alias("min_gap_secs"))
-
-
-_RETURNS_MONTH_SQL = """
-SELECT CAST(date_trunc('month', CAST(l_shipdate AS DATE)) AS DATE) AS month,
-       CAST(count(*) AS BIGINT) AS n_lines,
-       CAST(count(*) FILTER (WHERE l_returnflag = 'R') AS BIGINT)
-           AS n_returned,
-       CAST(count(*) FILTER (WHERE l_returnflag = 'R') * 1000000
-            // count(*) AS BIGINT) AS return_rate_e6,
-       round(CAST(sum(CASE WHEN l_returnflag = 'R'
-                  THEN CAST(floor(l_extendedprice * 100 + 0.5) AS HUGEINT)
-                  ELSE 0 END) AS DOUBLE) / 100, 2) AS returned_value
-FROM lineitem GROUP BY 1
-"""
-
-
-@register("q_lineitem_returns_by_month", _RETURNS_MONTH_SQL)
-def q_lineitem_returns_by_month(spark, sf_dir):
-    """Returns trend: per ship month, the returned-line rate (exact e6)
-    and returned value in exact cents — the operational returns series
-    behind TPC-H Q10's per-customer snapshot. One scan, one monthly
-    aggregate, conditional sums."""
-    l = _t(spark, sf_dir, "lineitem")
-    ret = (F.col("l_returnflag") == "R")
-    cents = F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5)) \
-        .cast("decimal(38,0)")
-    return (l.groupBy(F.date_trunc("month", F.col("l_shipdate").cast("date"))
-                      .cast("date").alias("month"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_lines"),
-                 F.sum(ret.cast("int")).cast("long").alias("n_returned"),
-                 F.expr("CAST(sum(CASE WHEN l_returnflag = 'R' THEN 1"
-                        " ELSE 0 END) * 1000000 div count(1) AS BIGINT)")
-                 .alias("return_rate_e6"),
-                 F.round(F.sum(F.when(ret, cents).otherwise(0))
-                         .cast("double") / 100, 2).alias("returned_value")))
-
-
-_WILSON_Z = repr(1.959963984540054)
-
-_WILSON_SQL = f"""
-WITH s AS (
-  SELECT event_type, CAST(count(*) AS HUGEINT) AS x,
-         (SELECT CAST(count(*) AS HUGEINT) FROM events) AS n
-  FROM events GROUP BY 1
-)
-SELECT event_type, CAST(x AS BIGINT) AS n_events,
-       CAST(x * 1000000 // n AS BIGINT) AS share_e6,
-       round(((CAST(x AS DOUBLE) / n)
-              + (({_WILSON_Z} * {_WILSON_Z}) / (2.0 * n))
-              - ({_WILSON_Z} * sqrt((((CAST(x AS DOUBLE) / n)
-                  * (1.0 - (CAST(x AS DOUBLE) / n))) / n)
-                  + (({_WILSON_Z} * {_WILSON_Z}) / (4.0 * n * n)))))
-             / (1.0 + (({_WILSON_Z} * {_WILSON_Z}) / n)), 6) AS wilson_lo,
-       round(((CAST(x AS DOUBLE) / n)
-              + (({_WILSON_Z} * {_WILSON_Z}) / (2.0 * n))
-              + ({_WILSON_Z} * sqrt((((CAST(x AS DOUBLE) / n)
-                  * (1.0 - (CAST(x AS DOUBLE) / n))) / n)
-                  + (({_WILSON_Z} * {_WILSON_Z}) / (4.0 * n * n)))))
-             / (1.0 + (({_WILSON_Z} * {_WILSON_Z}) / n)), 6) AS wilson_hi
-FROM s
-"""
-
-
-@register("q_events_wilson_ci", _WILSON_SQL)
-def q_events_wilson_ci(spark, sf_dir):
-    """Wilson score 95% confidence interval for each event type's traffic
-    share — the interval that stays valid at small counts and near 0/1
-    where the naive ±z√(pq/n) breaks (what a dashboard should draw around
-    every rate). The z constant is a repr() literal, p̂ derives from exact
-    integers, every float expression is parenthesized identically on both
-    engines, sqrt/division are IEEE-exact, result rounded to 6 dp (the
-    q_events_power_analysis discipline). One aggregate + broadcast
-    total."""
-    e = _t(spark, sf_dir, "events")
-    s = (e.groupBy("event_type")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("x"))
-         .crossJoin(F.broadcast(
-             e.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n")))))
-    z = _WILSON_Z
-    p = "(CAST(x AS DOUBLE) / n)"
-    half = (f"({z} * sqrt((({p} * (1.0 - {p})) / n)"
-            f" + (({z} * {z}) / (4.0 * n * n))))")
-    center = f"({p} + (({z} * {z}) / (2.0 * n)))"
-    denom = f"(1.0 + (({z} * {z}) / n))"
-    return s.select(
-        "event_type", F.col("x").cast("long").alias("n_events"),
-        F.expr("CAST(x * 1000000 div n AS BIGINT)").alias("share_e6"),
-        F.expr(f"round(({center} - {half}) / {denom}, 6)")
-        .alias("wilson_lo"),
-        F.expr(f"round(({center} + {half}) / {denom}, 6)")
-        .alias("wilson_hi"))
-
-
-_ACTIVATION_SQL = """
-WITH first_e AS (
-  SELECT user_id, min(ts) AS t0 FROM events GROUP BY 1
-), act AS (
-  SELECT f.user_id,
-         min(epoch_us(e.ts) // 1000000
-             - epoch_us(f.t0) // 1000000) AS secs
-  FROM first_e f JOIN events e ON e.user_id = f.user_id
-    AND e.event_type = 'purchase' AND e.ts > f.t0
-    AND epoch_us(e.ts) - epoch_us(f.t0) <= 86400000000
-  GROUP BY 1
-), r AS (
-  SELECT secs, row_number() OVER (ORDER BY secs) AS rn,
-         count(*) OVER () AS n
-  FROM act
-)
-SELECT CAST((SELECT count(*) FROM first_e) AS BIGINT) AS n_users,
-       CAST((SELECT count(*) FROM act) AS BIGINT) AS n_activated,
-       CAST((SELECT count(*) FROM act) * 1000000
-            // (SELECT count(*) FROM first_e) AS BIGINT)
-           AS activation_rate_e6,
-       CAST((SELECT secs FROM r WHERE rn = (n + 1) // 2) AS BIGINT)
-           AS median_secs_to_activation
-"""
-
-
-@register("q_events_activation_rate", _ACTIVATION_SQL)
-def q_events_activation_rate(spark, sf_dir):
-    """Activation metric: users who purchase within 24 hours of their
-    FIRST-ever event, with the exact median time-to-activation (lower
-    median of the activated set) — the onboarding north-star that
-    q_events_conversion_latency (click-anchored) and
-    q_events_growth_accounting (week-grained) both miss. One per-user
-    min, one banded equi-join on user_id, one tiny rank window over
-    ACTIVATED USERS."""
-    e = _t(spark, sf_dir, "events")
-    first_e = e.groupBy("user_id").agg(F.min("ts").alias("t0"))
-    us = lambda c: F.expr(f"unix_micros(cast({c} as timestamp))")  # noqa: E731
-    p = e.filter(F.col("event_type") == "purchase") \
-        .select("user_id", F.col("ts").alias("tp"))
-    act = (first_e.join(p, "user_id")
-           .filter((F.col("tp") > F.col("t0"))
-                   & (us("tp") - us("t0") <= 86400000000))
-           .groupBy("user_id")
-           .agg(F.min(F.expr(
-               "unix_micros(cast(tp as timestamp)) div 1000000"
-               " - unix_micros(cast(t0 as timestamp)) div 1000000"))
-                .alias("secs")))
-    r = (act.select("secs", F.row_number().over(Window.orderBy("secs"))
-                    .alias("rn"))
-         .withColumn("n", F.count(F.lit(1)).over(
-             Window.rowsBetween(Window.unboundedPreceding,
-                                Window.unboundedFollowing))))
-    med = (r.filter(F.expr("rn = (n + 1) div 2"))
-           .select(F.col("secs").alias("median_secs_to_activation")))
-    nu = first_e.agg(F.count(F.lit(1)).alias("n_users"))
-    na = act.agg(F.count(F.lit(1)).alias("n_activated"))
-    return (nu.crossJoin(na).crossJoin(F.broadcast(med))
-            .select(F.col("n_users").cast("long").alias("n_users"),
-                    F.col("n_activated").cast("long").alias("n_activated"),
-                    F.expr("CAST(n_activated * 1000000 div n_users"
-                           " AS BIGINT)").alias("activation_rate_e6"),
-                    F.col("median_secs_to_activation").cast("long")
-                    .alias("median_secs_to_activation")))
-
-
 _EDIT_DIST_SQL = """
 WITH d AS (
   SELECT doc_id, lang, substr(text, 1, 32) AS p FROM documents
@@ -16194,463 +6479,6 @@ def dedup_edit_distance_docs(spark, sf_dir):
     from .operators.dedup import edit_distance_pairs
     d = _t(spark, sf_dir, "documents")
     return edit_distance_pairs(d, max_dist=4, prefix_len=32, q=2)
-
-
-_TUKEY_SQL = """
-WITH f AS (
-  SELECT event_type,
-         quantile_disc(value, 0.25) AS q1,
-         quantile_disc(value, 0.75) AS q3
-  FROM events GROUP BY 1
-), fe AS (
-  SELECT event_type, q1, q3,
-         q1 - 1.5 * (q3 - q1) AS lo, q3 + 1.5 * (q3 - q1) AS hi
-  FROM f
-)
-SELECT fe.event_type, CAST(count(*) AS BIGINT) AS n_events,
-       round(fe.q1, 6) AS q1, round(fe.q3, 6) AS q3,
-       round(fe.lo, 6) AS fence_lo, round(fe.hi, 6) AS fence_hi,
-       CAST(sum(CASE WHEN e.value < fe.lo THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_low,
-       CAST(sum(CASE WHEN e.value > fe.hi THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_high,
-       CAST(sum(CASE WHEN e.value < fe.lo OR e.value > fe.hi
-                THEN 1 ELSE 0 END) * 1000000 // count(*) AS BIGINT)
-           AS outlier_rate_e6
-FROM events e JOIN fe USING (event_type)
-GROUP BY 1, 3, 4, 5, 6
-"""
-
-
-@register("q_events_tukey_fences", _TUKEY_SQL)
-def q_events_tukey_fences(spark, sf_dir):
-    """Tukey box-plot fences per event type: discrete (type-1) quartiles,
-    the 1.5·IQR fences, and how many observations fall outside each — the
-    distribution-free outlier screen that complements the parametric
-    z-score (q_events_zscore_outliers) and robust MAD (q_events_mad_outliers)
-    variants. Quartiles are real observations via the rank-window disc
-    trick (q_events_percentile_disc discipline), fences are IEEE-identical
-    double arithmetic on both engines, counts compare raw doubles to those
-    fences. Two passes: one quartile window, one broadcast-fence scan."""
-    ev = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy("value")
-    ranked = (ev.select("event_type", "value",
-                        F.row_number().over(w).alias("rn"))
-              .withColumn("n", F.count(F.lit(1)).over(
-                  Window.partitionBy("event_type"))))
-
-    def disc(p):
-        return F.min(F.when(
-            F.col("rn") >= F.ceil(F.lit(p) * F.col("n")), F.col("value")))
-
-    fences = (ranked.groupBy("event_type")
-              .agg(disc(0.25).alias("q1r"), disc(0.75).alias("q3r"))
-              .withColumn("lo", F.col("q1r") - 1.5 * (F.col("q3r")
-                                                      - F.col("q1r")))
-              .withColumn("hi", F.col("q3r") + 1.5 * (F.col("q3r")
-                                                      - F.col("q1r"))))
-    return (ev.join(F.broadcast(fences), "event_type")
-            .groupBy("event_type", "q1r", "q3r", "lo", "hi")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_events"),
-                 F.sum((F.col("value") < F.col("lo")).cast("int"))
-                 .cast("long").alias("n_low"),
-                 F.sum((F.col("value") > F.col("hi")).cast("int"))
-                 .cast("long").alias("n_high"),
-                 F.expr("CAST(sum(CASE WHEN value < lo OR value > hi"
-                        " THEN 1 ELSE 0 END) * 1000000 div count(1)"
-                        " AS BIGINT)").alias("outlier_rate_e6"))
-            .select("event_type", "n_events",
-                    F.round("q1r", 6).alias("q1"),
-                    F.round("q3r", 6).alias("q3"),
-                    F.round("lo", 6).alias("fence_lo"),
-                    F.round("hi", 6).alias("fence_hi"),
-                    "n_low", "n_high", "outlier_rate_e6"))
-
-
-_THEIL_SQL = """
-WITH spend AS (
-  SELECT c.c_mktsegment AS seg, o.o_custkey,
-         sum(CAST(floor(o.o_totalprice * 100 + 0.5) AS BIGINT)) AS cents
-  FROM orders o JOIN customer c ON c.c_custkey = o.o_custkey
-  GROUP BY 1, 2
-), tot AS (
-  SELECT seg, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(cents) AS BIGINT) AS total
-  FROM spend GROUP BY 1
-), terms AS (
-  SELECT s.seg,
-         CAST(floor((CAST(s.cents * t.n AS DOUBLE) / CAST(t.total AS DOUBLE))
-              * ln(CAST(s.cents * t.n AS DOUBLE) / CAST(t.total AS DOUBLE))
-              * 1000000 + 0.5) AS BIGINT) AS theil_t_e6,
-         CAST(floor(ln(CAST(s.cents AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)
-             AS lns_e6
-  FROM spend s JOIN tot t USING (seg)
-)
-SELECT t.seg AS mktsegment, t.n AS n_customers, t.total AS spend_cents,
-       CAST(floor(CAST(sum(x.theil_t_e6) AS DOUBLE) / t.n + 0.5) AS BIGINT)
-           AS theil_e6,
-       round(1.0 - exp((CAST(sum(x.lns_e6) AS DOUBLE) / t.n) / 1000000.0)
-                   * t.n / CAST(t.total AS DOUBLE), 6) AS atkinson_1
-FROM terms x JOIN tot t USING (seg)
-GROUP BY 1, 2, 3
-"""
-
-
-@register("q_customer_theil_atkinson", _THEIL_SQL)
-def q_customer_theil_atkinson(spark, sf_dir):
-    """Spend-inequality indices per market segment: Theil's T entropy index
-    (1/n)Σ(xᵢ/μ)ln(xᵢ/μ) and the Atkinson index at ε=1 (1 − geomean/μ) over
-    per-customer total order value — the decomposable inequality measures
-    that complement the ordinal Gini/Lorenz (q_revenue_gini_lorenz) and
-    concentration HHI (q_orders_hhi). Spend is exact cents; each per-customer
-    term is an exact-integer ratio cast to one IEEE double, ln'd, e6-rounded
-    and summed exactly (the q_events_powerlaw_fit float-log discipline), so
-    both engines fold identical integers. One join, two small aggregates."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    spend = (o.join(F.broadcast(c.select(F.col("c_custkey"),
-                                         F.col("c_mktsegment").alias("seg"))),
-                    F.col("c_custkey") == F.col("o_custkey"))
-             .groupBy("seg", "o_custkey")
-             .agg(F.sum(F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-                        .cast("long")).alias("cents")))
-    tot = spend.groupBy("seg").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("cents").cast("long").alias("total"))
-    terms = (spend.join(F.broadcast(tot), "seg")
-             .select("seg", "n", "total",
-                     F.floor((F.expr("CAST(cents * n AS DOUBLE)"
-                                     " / CAST(total AS DOUBLE)")
-                              * F.log(F.expr("CAST(cents * n AS DOUBLE)"
-                                             " / CAST(total AS DOUBLE)")))
-                             * 1000000 + F.lit(0.5)).cast("long")
-                     .alias("theil_t_e6"),
-                     F.floor(F.log(F.col("cents").cast("double"))
-                             * 1000000 + F.lit(0.5)).cast("long")
-                     .alias("lns_e6")))
-    return (terms.groupBy("seg", "n", "total")
-            .agg(F.floor(F.sum("theil_t_e6").cast("double")
-                         / F.col("n") + F.lit(0.5)).cast("long")
-                 .alias("theil_e6"),
-                 F.round(F.lit(1.0)
-                         - F.exp((F.sum("lns_e6").cast("double")
-                                  / F.col("n")) / F.lit(1000000.0))
-                         * F.col("n").cast("double")
-                         / F.col("total").cast("double"), 6)
-                 .alias("atkinson_1"))
-            .select(F.col("seg").alias("mktsegment"),
-                    F.col("n").alias("n_customers"),
-                    F.col("total").alias("spend_cents"),
-                    "theil_e6", "atkinson_1"))
-
-
-_JSD_SQL = """
-WITH tok AS (
-  SELECT source, t AS word, CAST(count(*) AS BIGINT) AS c
-  FROM (SELECT source, unnest(string_split(text, ' ')) AS t FROM documents)
-  WHERE t <> '' GROUP BY 1, 2
-), tot AS (
-  SELECT source, CAST(sum(c) AS BIGINT) AS n FROM tok GROUP BY 1
-), pairs AS (
-  SELECT a.source AS sa, a.n AS na, b.source AS sb, b.n AS nb
-  FROM tot a JOIN tot b ON a.source < b.source
-), wp AS (
-  SELECT p.sa, p.na, p.sb, p.nb, t.word
-  FROM pairs p JOIN tok t ON t.source = p.sa OR t.source = p.sb
-  GROUP BY 1, 2, 3, 4, 5
-), u AS (
-  SELECT wp.sa, wp.sb,
-         CAST(coalesce(ca.c, 0) AS DOUBLE) / wp.na AS p,
-         CAST(coalesce(cb.c, 0) AS DOUBLE) / wp.nb AS q
-  FROM wp
-  LEFT JOIN tok ca ON ca.source = wp.sa AND ca.word = wp.word
-  LEFT JOIN tok cb ON cb.source = wp.sb AND cb.word = wp.word
-)
-SELECT sa AS source_a, sb AS source_b,
-       CAST(count(*) AS BIGINT) AS n_words_union,
-       CAST(sum(CAST(floor(
-         ((CASE WHEN p > 0
-                THEN (0.5 * p) * ln((2.0 * p) / (p + q)) ELSE 0.0 END)
-          + (CASE WHEN q > 0
-                  THEN (0.5 * q) * ln((2.0 * q) / (p + q)) ELSE 0.0 END))
-         * 1000000000 + 0.5) AS BIGINT)) AS BIGINT) AS jsd_e9
-FROM u GROUP BY 1, 2
-"""
-
-
-@register("text_js_divergence", _JSD_SQL)
-def text_js_divergence(spark, sf_dir):
-    """Pairwise Jensen-Shannon divergence between source unigram
-    distributions — the symmetric, bounded information-theoretic distance
-    that complements text_source_tv_matrix's total variation (TV weighs
-    all mass equally; JSD up-weights disagreement on confident words) for
-    deciding which sources to mix or down-weight. Probabilities are exact
-    rationals cast to one IEEE double; each word's JSD term is e9-rounded
-    and exact-summed (the q_events_powerlaw_fit float-log discipline).
-    Spark side builds one word→{source:count} map and broadcasts the
-    source-pair list, so the shuffle is one vocabulary groupBy."""
-    d = _t(spark, sf_dir, "documents")
-    tok = (d.select("source", F.explode(F.split("text", " ")).alias("word"))
-           .filter(F.col("word") != "")
-           .groupBy("source", "word")
-           .agg(F.count(F.lit(1)).cast("long").alias("c")))
-    tot = tok.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
-    ta, tb = tot.alias("ta"), tot.alias("tb")
-    pairs = (ta.join(tb, F.col("ta.source") < F.col("tb.source"))
-             .select(F.col("ta.source").alias("sa"),
-                     F.col("ta.n").alias("na"),
-                     F.col("tb.source").alias("sb"),
-                     F.col("tb.n").alias("nb")))
-    wmap = (tok.groupBy("word")
-            .agg(F.map_from_entries(
-                F.collect_list(F.struct("source", "c"))).alias("m")))
-    u = (wmap.crossJoin(F.broadcast(pairs))
-         .select("sa", "sb",
-                 (F.coalesce(F.element_at("m", F.col("sa")), F.lit(0))
-                  .cast("double") / F.col("na")).alias("p"),
-                 (F.coalesce(F.element_at("m", F.col("sb")), F.lit(0))
-                  .cast("double") / F.col("nb")).alias("q"))
-         .filter((F.col("p") > 0) | (F.col("q") > 0)))
-    kl1 = F.when(F.col("p") > 0,
-                 (F.lit(0.5) * F.col("p"))
-                 * F.log((F.lit(2.0) * F.col("p"))
-                         / (F.col("p") + F.col("q")))).otherwise(F.lit(0.0))
-    kl2 = F.when(F.col("q") > 0,
-                 (F.lit(0.5) * F.col("q"))
-                 * F.log((F.lit(2.0) * F.col("q"))
-                         / (F.col("p") + F.col("q")))).otherwise(F.lit(0.0))
-    return (u.groupBy(F.col("sa").alias("source_a"),
-                      F.col("sb").alias("source_b"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_words_union"),
-                 F.sum(F.floor((kl1 + kl2) * 1000000000 + F.lit(0.5))
-                       .cast("long")).cast("long").alias("jsd_e9")))
-
-
-_CUSUM_SQL = """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(sum(CAST(floor("value" * 100 + 0.5) AS BIGINT)) AS BIGINT)
-             AS day_cents
-  FROM events GROUP BY 1, 2
-), tgt AS (
-  SELECT event_type,
-         CAST(sum(day_cents) AS BIGINT) // count(*) AS k
-  FROM daily GROUP BY 1
-), c AS (
-  SELECT d.event_type, d.day, d.day_cents, t.k,
-         sum(d.day_cents - t.k) OVER (PARTITION BY d.event_type
-             ORDER BY d.day ROWS UNBOUNDED PRECEDING) AS csum
-  FROM daily d JOIN tgt t USING (event_type)
-)
-SELECT event_type, day, day_cents, CAST(k AS BIGINT) AS target_cents,
-       CAST(csum - min(csum) OVER (PARTITION BY event_type ORDER BY day
-            ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cusum_hi,
-       CAST(max(csum) OVER (PARTITION BY event_type ORDER BY day
-            ROWS UNBOUNDED PRECEDING) - csum AS BIGINT) AS cusum_lo,
-       CAST(CASE WHEN csum - min(csum) OVER (PARTITION BY event_type
-                 ORDER BY day ROWS UNBOUNDED PRECEDING) > 2 * k
-            OR max(csum) OVER (PARTITION BY event_type ORDER BY day
-                 ROWS UNBOUNDED PRECEDING) - csum > 2 * k
-            THEN 1 ELSE 0 END AS BIGINT) AS alarm
-FROM c
-"""
-
-
-@register("q_events_cusum", _CUSUM_SQL)
-def q_events_cusum(spark, sf_dir):
-    """Two-sided CUSUM drift detection on daily event value per type: the
-    page-level change detector S_t = max(0, S_{t−1} + (x_t − k)) computed
-    WITHOUT the nonlinear recursion via the identity S_t = C_t − min_{j≤t}C_j
-    (and the low side symmetrically with a running max), where C is the
-    running sum of integer-cent deviations from the per-type mean day k —
-    so the whole statistic is exact integer arithmetic over two window
-    passes, no sequential state, alarming when either side exceeds 2k.
-    Complements q_events_changepoint (retrospective split) with the
-    sequential/streaming-style detector."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy("event_type",
-                       F.col("ts").cast("date").alias("day"))
-             .agg(F.sum(F.floor(F.col("value") * 100 + F.lit(0.5))
-                        .cast("long")).cast("long").alias("day_cents")))
-    tgt = daily.groupBy("event_type").agg(
-        F.expr("sum(day_cents) div count(1)").cast("long").alias("k"))
-    wd = (Window.partitionBy("event_type").orderBy("day")
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    c = (daily.join(F.broadcast(tgt), "event_type")
-         .withColumn("csum", F.sum(F.col("day_cents") - F.col("k")).over(wd)))
-    hi = F.col("csum") - F.min("csum").over(wd)
-    lo = F.max("csum").over(wd) - F.col("csum")
-    return c.select(
-        "event_type", "day", "day_cents",
-        F.col("k").alias("target_cents"),
-        hi.cast("long").alias("cusum_hi"),
-        lo.cast("long").alias("cusum_lo"),
-        F.when((hi > 2 * F.col("k")) | (lo > 2 * F.col("k")), 1)
-        .otherwise(0).cast("long").alias("alarm"))
-
-
-_ELASTICITY_SQL = """
-WITH d AS (
-  SELECT p.p_brand AS brand,
-         CAST(floor(ln(l.l_extendedprice / l.l_quantity) * 1000000 + 0.5)
-              AS HUGEINT) AS x,
-         CAST(floor(ln(l.l_quantity) * 1000000 + 0.5) AS HUGEINT) AS y
-  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-  WHERE l.l_quantity > 0
-), s AS (
-  SELECT brand, CAST(count(*) AS HUGEINT) AS n,
-         sum(x) AS sx, sum(y) AS sy, sum(x * y) AS sxy, sum(x * x) AS sxx
-  FROM d GROUP BY 1
-)
-SELECT brand, CAST(n AS BIGINT) AS n_lines,
-       CAST(((n * sxy - sx * sy) * 1000000000)
-            // (n * sxx - sx * sx) AS BIGINT) AS elasticity_e9
-FROM s
-"""
-
-
-@register("q_part_price_elasticity", _ELASTICITY_SQL)
-def q_part_price_elasticity(spark, sf_dir):
-    """Price elasticity of demand per part brand: the log-log OLS slope of
-    ln(quantity) on ln(unit price) across order lines — the econometric
-    read on how sharply volume responds to price, per brand. Logs are
-    e6-rounded to exact integers, the five OLS sums are exact
-    decimal(38,0)/HUGEINT (q_events_ols_trend discipline), and the slope
-    is emitted as truncated e9 fixed-point, so the result is
-    order-independent. One broadcast join (part is the small dim), one
-    grouped aggregate — map-side combinable at any scale."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    d = (li.filter(F.col("l_quantity") > 0)
-         .join(F.broadcast(p.select("p_partkey",
-                                    F.col("p_brand").alias("brand"))),
-               F.col("p_partkey") == F.col("l_partkey"))
-         .select("brand",
-                 F.floor(F.log(F.col("l_extendedprice")
-                               / F.col("l_quantity"))
-                         * 1000000 + F.lit(0.5))
-                 .cast("decimal(38,0)").alias("x"),
-                 F.floor(F.log(F.col("l_quantity")) * 1000000 + F.lit(0.5))
-                 .cast("decimal(38,0)").alias("y")))
-    s = d.groupBy("brand").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-        F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"))
-    return s.select(
-        "brand", F.col("n").cast("long").alias("n_lines"),
-        F.expr("CAST(((n * sxy - sx * sy) * 1000000000)"
-               " div (n * sxx - sx * sx) AS BIGINT)")
-        .alias("elasticity_e9"))
-
-
-def _tga_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the REAL TGA decode path: pixels are pure formulas of
-    (x, y, id) (sources/multimodal.synthetic_tga_media), so expected channel
-    means are recomputed here in plain Python without touching Targa bytes —
-    a wrong RLE packet, a missed bottom-up origin flip or a BGR/RGB swap
-    flips the hash."""
-    rows = []
-    for i in range(n):
-        w = 12 + (i * 5 + seed) % 15
-        h = 10 + (i * 7 + seed) % 11
-        rs = gs = bs = 0
-        for y in range(h):
-            for x in range(w):
-                rs += ((x // 5) * 7 + y * 3 + i) % 256
-                gs += ((x // 3) + y * 2 + i * 11) % 256
-                bs += (x + (y // 2) * 5 + i * 3) % 256
-        npx = w * h
-        rows.append(f"({i}, {w}, {h}, {rs / npx!r}, {gs / npx!r},"
-                    f" {bs / npx!r})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(r_mean AS DOUBLE) AS r_mean,"
-            f" CAST(g_mean AS DOUBLE) AS g_mean,"
-            f" CAST(b_mean AS DOUBLE) AS b_mean"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, r_mean, g_mean, b_mean)")
-
-
-@register("multimodal_tga_features", _tga_fixture_sql())
-def multimodal_tga_features(spark, sf_dir):
-    """REAL Truevision TGA decode end to end inside mapInPandas
-    (sources/multimodal.decode_tga): 24-bit raw (type 2) and run-length
-    encoded (type 10) payloads, top-down and legacy bottom-up row order,
-    footer detection — stdlib + numpy only."""
-    from .sources.multimodal import (
-        extract_image_features_real,
-        synthetic_tga_media,
-    )
-    return extract_image_features_real(synthetic_tga_media(spark, 30)) \
-        .select("media_id", "width", "height",
-                "r_mean", "g_mean", "b_mean")
-
-
-def _g711_fixture_sql(n: int = 24, seed: int = 42) -> str:
-    """Oracle for the REAL G.711 μ-law WAV path: the fixture tones are pure
-    formulas of (id, t), and the companding round-trip is re-derived here
-    with an INDEPENDENT pure-Python int implementation (bit_length segment
-    search vs the numpy searchsorted in sources/multimodal.ulaw_compress) —
-    so a wrong bias, segment edge, mantissa shift or RIFF fact-chunk walk
-    flips the hash. Sums of squares are exact ints; rms/duration are single
-    float divisions, identical doubles in any engine."""
-    import math
-
-    def compress(v: int) -> int:
-        sign = 0x80 if v < 0 else 0
-        u = min(abs(v), 32635) + 0x84
-        seg = (u >> 7).bit_length() - 1
-        return ~(sign | (seg << 4) | ((u >> (seg + 3)) & 0x0F)) & 0xFF
-
-    def expand(c: int) -> int:
-        ui = ~c & 0xFF
-        seg = (ui >> 4) & 0x07
-        t = ((((ui & 0x0F) << 3) | 0x84) << seg) - 0x84
-        return -t if ui & 0x80 else t
-
-    rows = []
-    for i in range(n):
-        rate = 8000
-        ns = 320 + (i % 4) * 60
-        freq = 180.0 + (i * 53 + seed) % 500
-        x = [expand(compress(int(
-            math.sin(2 * math.pi * freq * t / rate) * 15000)))
-            for t in range(ns)]
-        s2 = sum(v * v for v in x)
-        rms = math.sqrt(s2 / ns)
-        zc = sum(1 for a, b in zip(x[:-1], x[1:]) if (a < 0) != (b < 0))
-        rows.append(f"({i}, {rate}, {ns}, {ns / rate!r}, {rms!r}, {zc})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(sample_rate AS INTEGER) AS sample_rate,"
-            f" CAST(n_samples AS BIGINT) AS n_samples,"
-            f" CAST(duration_s AS DOUBLE) AS duration_s,"
-            f" CAST(rms AS DOUBLE) AS rms,"
-            f" CAST(zero_crossings AS BIGINT) AS zero_crossings"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, sample_rate, n_samples, duration_s, rms,"
-            f" zero_crossings)")
-
-
-@register("multimodal_g711_features", _g711_fixture_sql())
-def multimodal_g711_features(spark, sf_dir):
-    """REAL G.711 μ-law telephony WAV decode end to end: format-7 RIFF
-    bytes (18-byte fmt + fact chunk) walked manually and expanded through
-    the companding inverse (sources/multimodal.decode_wav / ulaw_expand),
-    features checked against an independent pure-Python companding
-    re-derivation in the oracle."""
-    from .sources.multimodal import (
-        extract_audio_features,
-        synthetic_g711_media,
-    )
-    out = extract_audio_features(synthetic_g711_media(spark, 24))
-    return out.select("media_id",
-                      F.col("sample_rate").cast("int").alias("sample_rate"),
-                      F.col("n_samples").cast("long").alias("n_samples"),
-                      "duration_s", "rms",
-                      F.col("zero_crossings").cast("long")
-                      .alias("zero_crossings"))
 
 
 _DAMERAU_SQL = """
@@ -16682,207 +6510,6 @@ def dedup_damerau_docs(spark, sf_dir):
     from .operators.dedup import damerau_pairs
     d = _t(spark, sf_dir, "documents")
     return damerau_pairs(d, max_dist=3, prefix_len=24, q=2)
-
-
-_JW_PARTS_SQL = """
-WITH d AS (
-  SELECT p_partkey AS id, p_brand AS brand,
-         split_part(p_name, ' ', 1) AS tok0, p_name AS nm,
-         length(p_name) AS ln
-  FROM part WHERE length(p_name) > 0
-)
-SELECT a.id AS id_a, b.id AS id_b, a.brand AS brand, a.tok0 AS tok0,
-       jaro_winkler_similarity(a.nm, b.nm) AS jw
-FROM d a JOIN d b
-  ON a.brand = b.brand AND a.tok0 = b.tok0 AND a.id < b.id
-WHERE jaro_winkler_similarity(a.nm, b.nm) >= 0.92
-"""
-
-
-@register("q_part_name_jw_match", _JW_PARTS_SQL)
-def q_part_name_jw_match(spark, sf_dir):
-    """Record-linkage fuzzy name match over the part catalog: pairs in the
-    same (brand, first-name-token) block whose full names score
-    Jaro-Winkler ≥ 0.92 — Winkler's census-ER scorer, the right metric
-    where names drift by suffix words rather than random edits. Spark plan
-    is a blocked equi-join + exact length-band prefilter + Arrow-batched
-    JW scoring (operators/dedup.jaro_winkler_pairs); the oracle scores the
-    same blocked join with DuckDB's NATIVE jaro_winkler_similarity — two
-    independent implementations of the standard constants (0.1 scaling,
-    4-char prefix cap, 0.7 boost threshold) produce bit-identical float64,
-    so the value hash compares raw doubles, not rounded ones."""
-    from .operators.dedup import jaro_winkler_pairs
-    p = _t(spark, sf_dir, "part")
-    names = (p.select(F.col("p_partkey").alias("id"),
-                      F.col("p_brand").alias("brand"),
-                      F.split_part(F.col("p_name"), F.lit(" "), F.lit(1))
-                      .alias("tok0"),
-                      F.col("p_name").alias("name")))
-    return jaro_winkler_pairs(names, threshold=0.92,
-                              block_cols=("brand", "tok0"))
-
-
-_SHAPLEY_SQL = """
-WITH p AS (
-  SELECT user_id, min(ts) AS t0 FROM events
-  WHERE event_type = 'purchase' GROUP BY 1
-), ch AS (
-  SELECT event_type, CAST(row_number() OVER (ORDER BY event_type) AS BIGINT)
-             AS idx
-  FROM (SELECT DISTINCT event_type FROM events
-        WHERE event_type <> 'purchase')
-), k AS (SELECT count(*) AS kk FROM ch),
-tm AS (
-  SELECT p.user_id,
-         coalesce(bit_or(1 << (ch.idx - 1)), 0) AS m
-  FROM p
-  LEFT JOIN events e ON e.user_id = p.user_id AND e.ts < p.t0
-       AND e.event_type <> 'purchase'
-  LEFT JOIN ch ON ch.event_type = e.event_type
-  GROUP BY 1
-), cm AS (SELECT m, CAST(count(*) AS BIGINT) AS c FROM tm GROUP BY 1),
-S AS (
-  WITH RECURSIVE r(s) AS (
-    SELECT CAST(0 AS BIGINT)
-    UNION ALL
-    SELECT s + 1 FROM r WHERE s + 1 < (SELECT 1 << kk FROM k)
-  ) SELECT s FROM r
-),
-v AS (
-  SELECT s, coalesce(sum(c), 0) AS v
-  FROM S LEFT JOIN cm ON (cm.m & S.s) = cm.m GROUP BY 1
-), term AS (
-  SELECT ch.event_type, k.kk,
-         factorial(CAST(bit_count(v0.s) AS INTEGER))
-           * factorial(CAST(k.kk - 1 - bit_count(v0.s) AS INTEGER))
-           * (v1.v - v0.v) AS t
-  FROM ch CROSS JOIN k
-  JOIN v v0 ON (v0.s & (1 << (ch.idx - 1))) = 0
-  JOIN v v1 ON v1.s = (v0.s | (1 << (ch.idx - 1)))
-), expo AS (
-  SELECT ch.event_type, CAST(sum(cm.c) AS BIGINT) AS exposed
-  FROM ch JOIN cm ON (cm.m & (1 << (ch.idx - 1))) <> 0
-  GROUP BY 1
-)
-SELECT term.event_type AS channel,
-       coalesce(expo.exposed, 0) AS exposed_conversions,
-       CAST(sum(term.t) * 1000000 // factorial(CAST(max(term.kk) AS INTEGER)) AS BIGINT)
-           AS shapley_e6
-FROM term LEFT JOIN expo ON expo.event_type = term.event_type
-GROUP BY 1, 2
-"""
-
-
-@register("q_events_shapley_attribution", _SHAPLEY_SQL)
-def q_events_shapley_attribution(spark, sf_dir):
-    """EXACT Shapley-value conversion attribution (the data-driven
-    attribution model, Shapley 1953 applied to marketing coalitions): each
-    non-purchase channel's credit is the exact Shapley value of the
-    coalition game v(S) = number of converting users whose pre-conversion
-    touch set is a subset of S. Touch sets are per-user bitmasks (bit_or
-    over the alphabetical channel index), v is the subset-sum zeta
-    transform computed as a 2^k × 2^k broadcast mask join (k = |channels|,
-    vocabulary-bounded — 4 here, so 16 coalitions), and φ(i) =
-    Σ_{S∌i} |S|!·(k−1−|S|)!·(v(S∪i)−v(S)) / k! with exact BIGINT
-    factorial weights, emitted as e6 fixed-point (v is monotone, so every
-    term is ≥ 0 and integer div is well-defined). The only data-sized work
-    is one equi-join of events to first-purchase times and one per-user
-    bit_or — everything after is on the 2^k coalition table. 100-TB
-    posture: the coalition algebra never touches the events table again."""
-    e = _t(spark, sf_dir, "events")
-    p = (e.filter(F.col("event_type") == "purchase")
-         .groupBy("user_id").agg(F.min("ts").alias("t0")))
-    ch = (e.filter(F.col("event_type") != "purchase")
-          .select("event_type").distinct()
-          .select("event_type",
-                  F.row_number().over(Window.orderBy("event_type"))
-                  .cast("long").alias("idx")))
-    k = ch.count()  # vocabulary-bounded scalar (# distinct channels)
-    ch2 = ch.select(F.col("event_type").alias("ch_type"), "idx")
-    touches = (p.join(e.alias("e"),
-                      (F.col("e.user_id") == p["user_id"])
-                      & (F.col("e.ts") < F.col("t0"))
-                      & (F.col("e.event_type") != "purchase"), "left")
-               .join(F.broadcast(ch2),
-                     F.col("ch_type") == F.col("e.event_type"), "left"))
-    tm = (touches.groupBy(p["user_id"])
-          .agg(F.coalesce(
-              F.expr("bit_or(shiftleft(1L, cast(idx as int) - 1))"),
-              F.lit(0).cast("long")).alias("m")))
-    cm = tm.groupBy("m").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    S = spark.range(0, 1 << k).select(F.col("id").alias("s"))
-    v = (S.join(F.broadcast(cm), (F.col("m").bitwiseAND(F.col("s")))
-                == F.col("m"), "left")
-         .groupBy("s")
-         .agg(F.coalesce(F.sum("c"), F.lit(0).cast("long")).alias("v")))
-    v0, v1 = v.alias("v0"), v.alias("v1")
-    bit = F.expr("shiftleft(1L, cast(idx as int) - 1)")
-    term = (ch.crossJoin(F.broadcast(v0))
-            .filter(F.col("v0.s").bitwiseAND(bit) == 0)
-            .join(F.broadcast(v1),
-                  F.col("v1.s") == F.col("v0.s").bitwiseOR(bit))
-            .select("event_type",
-                    (F.factorial(F.bit_count(F.col("v0.s")).cast("int"))
-                     * F.factorial(F.lit(k - 1)
-                                   - F.bit_count(F.col("v0.s")).cast("int"))
-                     * (F.col("v1.v") - F.col("v0.v"))).alias("t")))
-    expo = (ch.join(F.broadcast(cm),
-                    F.col("m").bitwiseAND(bit) != 0)
-            .groupBy("event_type")
-            .agg(F.sum("c").cast("long").alias("exposed")))
-    return (term.groupBy("event_type")
-            .agg(F.sum("t").alias("phi_num"))
-            .join(F.broadcast(expo), "event_type", "left")
-            .select(F.col("event_type").alias("channel"),
-                    F.coalesce(F.col("exposed"), F.lit(0).cast("long"))
-                    .alias("exposed_conversions"),
-                    F.expr(f"CAST(phi_num * 1000000"
-                           f" div factorial({k}) AS BIGINT)")
-                    .alias("shapley_e6")))
-
-
-def _qoi_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the REAL QOI decode path: pixels are pure formulas of
-    (x, y, id) (sources/multimodal.synthetic_qoi_media), so expected
-    channel means are recomputed here in plain Python with no QOI bytes —
-    one wrong DIFF bias, LUMA nibble, RUN length or index-hash slot flips
-    the hash."""
-    rows = []
-    for i in range(n):
-        w = 13 + (i * 5 + seed) % 12
-        h = 11 + (i * 7 + seed) % 10
-        rs = gs = bs = 0
-        for y in range(h):
-            for x in range(w):
-                rs += (x + y + i) % 256
-                gs += ((x // 6) * 40 + i * 11) % 256
-                bs += ((x % 4) * 61 + (y % 3) * 97 + i) % 256
-        npx = w * h
-        rows.append(f"({i}, {w}, {h}, {rs / npx!r}, {gs / npx!r},"
-                    f" {bs / npx!r})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(r_mean AS DOUBLE) AS r_mean,"
-            f" CAST(g_mean AS DOUBLE) AS g_mean,"
-            f" CAST(b_mean AS DOUBLE) AS b_mean"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, r_mean, g_mean, b_mean)")
-
-
-@register("multimodal_qoi_features", _qoi_fixture_sql())
-def multimodal_qoi_features(spark, sf_dir):
-    """REAL QOI (Quite OK Image, qoiformat.org) decode end to end inside
-    mapInPandas: INDEX/DIFF/LUMA/RUN/literal ops, the 64-slot color hash,
-    wrap-around u8 arithmetic, RGB and RGBA payloads
-    (sources/multimodal.decode_qoi) — stdlib + numpy only."""
-    from .sources.multimodal import (
-        extract_image_features_real,
-        synthetic_qoi_media,
-    )
-    return extract_image_features_real(synthetic_qoi_media(spark, 30)) \
-        .select("media_id", "width", "height",
-                "r_mean", "g_mean", "b_mean")
 
 
 def _eigencentrality_sql(n_iters: int = 5, scale: int = 10**6,
@@ -16935,2223 +6562,6 @@ def kg_eigencentrality_docs(spark, sf_dir):
              .withColumnRenamed("term_b", "obj"))
 
 
-_MOMENTS_SQL = """
-WITH d AS (
-  SELECT event_type,
-         CAST(floor("value" * 100 + 0.5) AS HUGEINT) AS y
-  FROM events
-), s AS (
-  SELECT event_type, CAST(count(*) AS HUGEINT) AS n,
-         sum(y) AS s1, sum(y * y) AS s2, sum(y * y * y) AS s3,
-         sum(y * y * y * y) AS s4
-  FROM d GROUP BY 1
-), a AS (
-  SELECT event_type, n, s1,
-         n * s2 - s1 * s1 AS a2,
-         n * n * s3 - 3 * n * s1 * s2 + 2 * s1 * s1 * s1 AS a3,
-         n * n * n * s4 - 4 * n * n * s1 * s3
-           + 6 * n * s1 * s1 * s2 - 3 * s1 * s1 * s1 * s1 AS a4
-  FROM s
-)
-SELECT event_type, CAST(n AS BIGINT) AS n,
-       CAST(s1 * 1000000 // n AS BIGINT) AS mean_cents_e6,
-       CAST(a2 * 1000000 // (n * n) AS BIGINT) AS var_pop_e6,
-       CAST(a3 AS DOUBLE)
-         / (CAST(a2 AS DOUBLE) * sqrt(CAST(a2 AS DOUBLE))) AS skewness,
-       CAST(a4 AS DOUBLE)
-         / (CAST(a2 AS DOUBLE) * CAST(a2 AS DOUBLE)) - 3.0
-           AS kurtosis_excess
-FROM a ORDER BY event_type
-"""
-
-
-@register("q_events_moments_profile", _MOMENTS_SQL)
-def q_events_moments_profile(spark, sf_dir):
-    """Distribution-shape profile per event type: population mean,
-    variance, skewness g1 and excess kurtosis g2 — the third/fourth-moment
-    read on value distributions that variance alone misses (heavy tails,
-    asymmetry). Four map-side-combinable integer power sums (Σy..Σy⁴ in
-    decimal(38,0)/HUGEINT over cents) feed exact central-moment
-    numerators A2 = nΣy²−(Σy)², A3 = n²Σy³−3nΣyΣy²+2(Σy)³,
-    A4 = n³Σy⁴−4n²ΣyΣy³+6n(Σy)²Σy²−3(Σy)⁴; the normalizers cancel —
-    g1 = A3/A2^1.5, g2 = A4/A2²−3 — so the only float ops are a cast,
-    multiplications, sqrt and division, every one IEEE correctly-rounded
-    on identical integers in both engines ⇒ bit-identical doubles
-    (A2^1.5 is written A2·√A2, never pow, because libm pow is not
-    correctly rounded). Overflow bound: (Σy)⁴ ≈ 10³² at sf0.1, < 10³⁸
-    through ~10⁹ rows per group. One shuffle on a 5-key column."""
-    e = _t(spark, sf_dir, "events")
-    d = e.select("event_type",
-                 F.floor(F.col("value") * 100 + F.lit(0.5))
-                 .cast("decimal(38,0)").alias("y"))
-    s = d.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-        F.sum("y").alias("s1"),
-        F.sum(F.col("y") * F.col("y")).alias("s2"),
-        F.sum(F.col("y") * F.col("y") * F.col("y")).alias("s3"),
-        F.sum(F.col("y") * F.col("y") * F.col("y") * F.col("y"))
-        .alias("s4"))
-    a = s.select(
-        "event_type", "n", "s1",
-        F.expr("n * s2 - s1 * s1").alias("a2"),
-        F.expr("n * n * s3 - 3 * n * s1 * s2"
-               " + 2 * s1 * s1 * s1").alias("a3"),
-        F.expr("n * n * n * s4 - 4 * n * n * s1 * s3"
-               " + 6 * n * s1 * s1 * s2"
-               " - 3 * s1 * s1 * s1 * s1").alias("a4"))
-    return (a.select(
-        "event_type", F.col("n").cast("long").alias("n"),
-        F.expr("CAST(s1 * 1000000 div n AS BIGINT)")
-        .alias("mean_cents_e6"),
-        F.expr("CAST(a2 * 1000000 div (n * n) AS BIGINT)")
-        .alias("var_pop_e6"),
-        F.expr("CAST(a3 AS DOUBLE)"
-               " / (CAST(a2 AS DOUBLE) * sqrt(CAST(a2 AS DOUBLE)))")
-        .alias("skewness"),
-        F.expr("CAST(a4 AS DOUBLE)"
-               " / (CAST(a2 AS DOUBLE) * CAST(a2 AS DOUBLE)) - 3.0")
-        .alias("kurtosis_excess"))
-        .orderBy("event_type"))
-
-
-_HW_SQL = """
-WITH RECURSIVE daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS HUGEINT) AS y
-  FROM events GROUP BY 1
-), idx AS (
-  SELECT d, y, row_number() OVER (ORDER BY d) - 1 AS ix FROM daily
-), init AS (
-  SELECT (sum(y) * 1000000) // 7 AS l0,
-         list(y * 1000000 - (SELECT (sum(y) * 1000000) // 7
-                             FROM idx WHERE ix < 7)
-              ORDER BY ix) AS ss
-  FROM idx WHERE ix < 7
-), hw AS (
-  SELECT CAST(6 AS BIGINT) AS ix, x.d, x.y,
-         init.l0 AS l, CAST(0 AS HUGEINT) AS b, init.ss AS ss,
-         CAST(NULL AS HUGEINT) AS season_e6,
-         CAST(NULL AS HUGEINT) AS fitted
-  FROM init, idx x WHERE x.ix = 6
-  UNION ALL
-  SELECT nx.ix, nx.d, nx.y,
-         (2 * (nx.y * 1000000 - h.ss[1]) + 8 * (h.l + h.b)) // 10,
-         (2 * ((2 * (nx.y * 1000000 - h.ss[1]) + 8 * (h.l + h.b)) // 10
-               - h.l) + 8 * h.b) // 10,
-         list_append(h.ss[2:],
-           (2 * (nx.y * 1000000
-                 - (2 * (nx.y * 1000000 - h.ss[1])
-                    + 8 * (h.l + h.b)) // 10)
-            + 8 * h.ss[1]) // 10),
-         h.ss[1],
-         h.l + h.b + h.ss[1]
-  FROM hw h JOIN idx nx ON nx.ix = h.ix + 1
-)
-SELECT d AS day, CAST(y AS BIGINT) AS n_events,
-       CAST(l AS BIGINT) AS level_e6, CAST(b AS BIGINT) AS trend_e6,
-       CAST(season_e6 AS BIGINT) AS season_e6,
-       CAST(fitted AS BIGINT) AS fitted_e6
-FROM hw WHERE ix >= 7
-"""
-
-
-@register("q_events_holtwinters_forecast", _HW_SQL)
-def q_events_holtwinters_forecast(spark, sf_dir):
-    """Holt-Winters ADDITIVE-SEASONAL smoothing over the daily-volume
-    series (period m=7, α=β=γ=0.2 as exact e6 fixed-point recurrences:
-    l←(2(y−s₋ₘ)+8(l+b)) div 10, b←(2Δl+8b) div 10,
-    s←(2(y−l)+8·s₋ₘ) div 10) — the day-of-week-aware forecaster that
-    q_events_holt_forecast's trend-only model misses. Init is declared:
-    l₆ = mean of the first week (integer div), b₆ = 0, seasonal vector =
-    first-week deviations. The oracle carries the rotating 7-slot
-    seasonal state as a LIST column through a recursive CTE; the engine
-    reduces the scan distributively, collects only the 30-row daily
-    aggregate, recurses exactly in the driver (BPE vocabulary-bounded
-    discipline) and re-parallelizes. Output rows start at the second
-    week (ix ≥ 7), each with level/trend/season and the one-step-ahead
-    fitted value l+b+s₋ₘ."""
-    M = 7
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast("long").alias("y"))
-             .orderBy("d"))
-    rows = daily.collect()
-    schema = ("day date, n_events long, level_e6 long, trend_e6 long,"
-              " season_e6 long, fitted_e6 long")
-    if len(rows) <= M:
-        return spark.createDataFrame([], schema)
-
-    def tdiv(a: int, b: int) -> int:
-        q = abs(a) // abs(b)
-        return -q if (a < 0) != (b < 0) else q
-
-    ys = [int(r["y"]) for r in rows]
-    l = tdiv(sum(ys[:M]) * 1_000_000, M)
-    b = 0
-    ss = [y * 1_000_000 - l for y in ys[:M]]
-    out = []
-    for i in range(M, len(rows)):
-        y = ys[i]
-        s_used = ss[0]
-        fitted = l + b + s_used
-        nl = tdiv(2 * (y * 1_000_000 - s_used) + 8 * (l + b), 10)
-        nb = tdiv(2 * (nl - l) + 8 * b, 10)
-        ns = tdiv(2 * (y * 1_000_000 - nl) + 8 * s_used, 10)
-        ss = ss[1:] + [ns]
-        l, b = nl, nb
-        out.append((rows[i]["d"], y, l, b, s_used, fitted))
-    return spark.createDataFrame(out, schema)
-
-
-_THEIL_SEN_SQL = """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(count(*) AS HUGEINT) AS y
-  FROM events GROUP BY 1, 2
-), idx AS (
-  SELECT event_type, y,
-         CAST(row_number() OVER (PARTITION BY event_type ORDER BY d) - 1
-              AS HUGEINT) AS x
-  FROM daily
-), sl AS (
-  SELECT a.event_type,
-         (b.y - a.y) * 1000000000 // (b.x - a.x) AS s
-  FROM idx a JOIN idx b
-    ON a.event_type = b.event_type AND b.x > a.x
-), med AS (
-  SELECT event_type, CAST(s AS BIGINT) AS slope_e9,
-         row_number() OVER (PARTITION BY event_type ORDER BY s) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS n
-  FROM sl
-), m AS (
-  SELECT event_type, CAST(n AS BIGINT) AS n_pairs, slope_e9
-  FROM med WHERE rn = (n + 1) // 2
-), iv AS (
-  SELECT i.event_type, m.n_pairs, m.slope_e9,
-         CAST(i.y AS HUGEINT) * 1000000000
-           - CAST(m.slope_e9 AS HUGEINT) * i.x AS v
-  FROM idx i JOIN m ON m.event_type = i.event_type
-), ivr AS (
-  SELECT event_type, n_pairs, slope_e9, v,
-         row_number() OVER (PARTITION BY event_type ORDER BY v) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS mm
-  FROM iv
-)
-SELECT event_type, n_pairs, slope_e9, CAST(v AS BIGINT) AS intercept_e9
-FROM ivr WHERE rn = (mm + 1) // 2
-"""
-
-
-@register("q_events_theil_sen", _THEIL_SEN_SQL)
-def q_events_theil_sen(spark, sf_dir):
-    """Theil-Sen robust trend per event type: the LOWER MEDIAN of all
-    pairwise slopes of the daily-volume series (e9 fixed-point, truncating
-    div — exact integers, so the median pick is order-free), plus the
-    Theil-Sen intercept (lower median of y·1e9 − slope·x). Outlier days
-    that wreck q_events_ols_trend's least-squares slope move at most half
-    the pairs here — the 29.3%-breakdown estimator. The pair join runs on
-    the DAILY AGGREGATE (≤ 30 rows per type), never on raw events: the
-    scan reduces distributively first, the O(m²) pair algebra is
-    vocabulary-bounded."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("y")))
-    idx = daily.select(
-        "event_type", "y",
-        (F.row_number().over(
-            Window.partitionBy("event_type").orderBy("d")) - 1)
-        .cast("decimal(38,0)").alias("x"))
-    a, b = idx.alias("a"), idx.alias("b")
-    sl = (a.join(b, (F.col("a.event_type") == F.col("b.event_type"))
-                 & (F.col("b.x") > F.col("a.x")))
-          .select(F.col("a.event_type").alias("event_type"),
-                  F.expr("(b.y - a.y) * 1000000000 div (b.x - a.x)")
-                  .cast("long").alias("s")))
-    wm = Window.partitionBy("event_type").orderBy("s")
-    wc = Window.partitionBy("event_type")
-    med = (sl.select("event_type", F.col("s").alias("slope_e9"),
-                     F.row_number().over(wm).alias("rn"),
-                     F.count(F.lit(1)).over(wc).alias("n"))
-           .filter(F.expr("rn = (n + 1) div 2"))
-           .select("event_type", F.col("n").cast("long").alias("n_pairs"),
-                   "slope_e9"))
-    iv = (idx.join(F.broadcast(med), "event_type")
-          .select("event_type", "n_pairs", "slope_e9",
-                  F.expr("CAST(y * 1000000000"
-                         " - CAST(slope_e9 AS decimal(38,0)) * x"
-                         " AS decimal(38,0))").alias("v")))
-    wv = Window.partitionBy("event_type").orderBy("v")
-    return (iv.select("event_type", "n_pairs", "slope_e9", "v",
-                      F.row_number().over(wv).alias("rn"),
-                      F.count(F.lit(1)).over(wc).alias("m"))
-            .filter(F.expr("rn = (m + 1) div 2"))
-            .select("event_type", "n_pairs", "slope_e9",
-                    F.col("v").cast("long").alias("intercept_e9")))
-
-
-_MANN_KENDALL_SQL = """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS d,
-         CAST(count(*) AS HUGEINT) AS y
-  FROM events GROUP BY 1, 2
-), idx AS (
-  SELECT event_type, y,
-         row_number() OVER (PARTITION BY event_type ORDER BY d) AS x
-  FROM daily
-), s AS (
-  SELECT a.event_type,
-         CAST(sum(CASE WHEN b.y > a.y THEN 1
-                       WHEN b.y < a.y THEN -1 ELSE 0 END) AS HUGEINT) AS sk
-  FROM idx a JOIN idx b
-    ON a.event_type = b.event_type AND b.x > a.x
-  GROUP BY 1
-), nn AS (
-  SELECT event_type, CAST(count(*) AS HUGEINT) AS n FROM idx GROUP BY 1
-), ties AS (
-  SELECT event_type,
-         coalesce(sum(t * (t - 1) * (2 * t + 5)), 0) AS tcorr
-  FROM (SELECT event_type, CAST(count(*) AS HUGEINT) AS t
-        FROM idx GROUP BY event_type, y)
-  WHERE t > 1 GROUP BY 1
-), v AS (
-  SELECT nn.event_type, s.sk, nn.n,
-         nn.n * (nn.n - 1) * (2 * nn.n + 5)
-           - coalesce(ties.tcorr, 0) AS var18
-  FROM nn JOIN s ON s.event_type = nn.event_type
-  LEFT JOIN ties ON ties.event_type = nn.event_type
-)
-SELECT event_type, CAST(n AS BIGINT) AS n_days, CAST(sk AS BIGINT) AS s,
-       CAST(var18 AS BIGINT) AS var18,
-       CASE WHEN sk > 0 THEN CAST(sk - 1 AS DOUBLE)
-                 / sqrt(CAST(var18 AS DOUBLE) / 18.0)
-            WHEN sk < 0 THEN CAST(sk + 1 AS DOUBLE)
-                 / sqrt(CAST(var18 AS DOUBLE) / 18.0)
-            ELSE 0.0 END AS z
-FROM v
-"""
-
-
-@register("q_events_mann_kendall", _MANN_KENDALL_SQL)
-def q_events_mann_kendall(spark, sf_dir):
-    """Mann-Kendall nonparametric trend test per event type over the daily
-    series: S = Σ_{i<j} sign(yⱼ−yᵢ) (exact integer), the tie-corrected
-    variance 18·Var = n(n−1)(2n+5) − Σₜ t(t−1)(2t+5) (exact integer), and
-    the continuity-corrected z = (S∓1)/√(Var) — the monotone-trend
-    detector that needs no distributional assumption (complements
-    q_events_theil_sen's slope the way runs-test complements OLS). The
-    only float ops are a cast, one division by 18.0, sqrt, and a final
-    division — all IEEE correctly rounded on identical integers, so z is
-    bit-identical cross-engine. Pair algebra runs on the ≤30-row daily
-    aggregate per type."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy("event_type", F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("y")))
-    idx = daily.select(
-        "event_type", "y",
-        F.row_number().over(
-            Window.partitionBy("event_type").orderBy("d")).alias("x"))
-    a, b = idx.alias("a"), idx.alias("b")
-    s = (a.join(b, (F.col("a.event_type") == F.col("b.event_type"))
-                & (F.col("b.x") > F.col("a.x")))
-         .groupBy(F.col("a.event_type").alias("event_type"))
-         .agg(F.sum(F.when(F.col("b.y") > F.col("a.y"), 1)
-                    .when(F.col("b.y") < F.col("a.y"), -1)
-                    .otherwise(0)).cast("decimal(38,0)").alias("sk")))
-    nn = (idx.groupBy("event_type")
-          .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n")))
-    ties = (idx.groupBy("event_type", "y")
-            .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("t"))
-            .filter(F.col("t") > 1)
-            .groupBy("event_type")
-            .agg(F.sum(F.expr("t * (t - 1) * (2 * t + 5)"))
-                 .alias("tcorr")))
-    v = (nn.join(s, "event_type")
-         .join(ties, "event_type", "left")
-         .select("event_type", "sk", "n",
-                 F.expr("n * (n - 1) * (2 * n + 5)"
-                        " - coalesce(tcorr, CAST(0 AS decimal(38,0)))")
-                 .alias("var18")))
-    return v.select(
-        "event_type", F.col("n").cast("long").alias("n_days"),
-        F.col("sk").cast("long").alias("s"),
-        F.col("var18").cast("long").alias("var18"),
-        F.expr("CASE WHEN sk > 0 THEN CAST(sk - 1 AS DOUBLE)"
-               " / sqrt(CAST(var18 AS DOUBLE) / 18.0)"
-               " WHEN sk < 0 THEN CAST(sk + 1 AS DOUBLE)"
-               " / sqrt(CAST(var18 AS DOUBLE) / 18.0)"
-               " ELSE 0.0 END").alias("z"))
-
-
-def _audio_feature_values_sql(rows: list) -> str:
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(sample_rate AS INTEGER) AS sample_rate,"
-            f" CAST(n_samples AS BIGINT) AS n_samples,"
-            f" CAST(duration_s AS DOUBLE) AS duration_s,"
-            f" CAST(rms AS DOUBLE) AS rms,"
-            f" CAST(zero_crossings AS BIGINT) AS zero_crossings"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, sample_rate, n_samples, duration_s, rms,"
-            f" zero_crossings)")
-
-
-def _alaw_fixture_sql(n: int = 24, seed: int = 42) -> str:
-    """Oracle for the REAL G.711 A-law WAV path: tones are pure formulas
-    of (id, t) and the companding round-trip is re-derived with an
-    INDEPENDENT pure-Python int implementation (bit_length segment search
-    vs the numpy searchsorted in sources/multimodal.alaw_compress) — a
-    wrong segment edge, mantissa shift, XOR mask or sign convention flips
-    the hash."""
-    import math
-
-    def compress(v: int) -> int:
-        mask = 0xD5 if v >= 0 else 0x55
-        a = min(abs(v), 0x7FFF)
-        if a < 256:
-            code = a >> 4
-        else:
-            seg = (a >> 8).bit_length()
-            code = (seg << 4) | ((a >> (seg + 3)) & 0x0F)
-        return (code ^ mask) & 0xFF
-
-    def expand(c: int) -> int:
-        ui = c ^ 0x55
-        seg = (ui >> 4) & 0x07
-        mant = ui & 0x0F
-        t = (mant << 4) + 8 if seg == 0 else ((mant << 4) + 0x108) << (seg - 1)
-        return t if ui & 0x80 else -t
-
-    rows = []
-    for i in range(n):
-        rate = 8000
-        ns = 300 + (i % 4) * 70
-        freq = 190.0 + (i * 59 + seed) % 480
-        x = [expand(compress(int(
-            math.sin(2 * math.pi * freq * t / rate) * 14000)))
-            for t in range(ns)]
-        s2 = sum(v * v for v in x)
-        rms = math.sqrt(s2 / ns)
-        zc = sum(1 for a, b in zip(x[:-1], x[1:]) if (a < 0) != (b < 0))
-        rows.append(f"({i}, {rate}, {ns}, {ns / rate!r}, {rms!r}, {zc})")
-    return _audio_feature_values_sql(rows)
-
-
-@register("multimodal_alaw_features", _alaw_fixture_sql())
-def multimodal_alaw_features(spark, sf_dir):
-    """REAL G.711 A-law telephony WAV decode end to end (format-6 RIFF
-    walk + companding inverse, sources/multimodal.alaw_expand; the
-    compress/expand byte layout is involutive on all 256 codes), features
-    checked against an independent pure-Python companding re-derivation."""
-    from .sources.multimodal import (
-        extract_audio_features,
-        synthetic_alaw_media,
-    )
-    out = extract_audio_features(synthetic_alaw_media(spark, 24))
-    return out.select("media_id",
-                      F.col("sample_rate").cast("int").alias("sample_rate"),
-                      F.col("n_samples").cast("long").alias("n_samples"),
-                      "duration_s", "rms",
-                      F.col("zero_crossings").cast("long")
-                      .alias("zero_crossings"))
-
-
-def _aiff_fixture_sql(n: int = 24, seed: int = 42) -> str:
-    """Oracle for the REAL AIFF path: tones are pure formulas of (id, t),
-    recomputed in plain Python with no AIFF bytes — a wrong 80-bit
-    extended-float exponent, a missed SSND offset or a byte-order slip in
-    the big-endian PCM flips the hash (rates are distinct per row, so the
-    f80 decode is pinned row by row)."""
-    import math
-
-    rows = []
-    for i in range(n):
-        rate = (8000, 11025, 22050, 44100)[i % 4]
-        ns = 280 + (i % 5) * 64
-        freq = 160.0 + (i * 47 + seed) % 520
-        x = [int(math.sin(2 * math.pi * freq * t / rate) * 13000)
-             for t in range(ns)]
-        s2 = sum(v * v for v in x)
-        rms = math.sqrt(s2 / ns)
-        zc = sum(1 for a, b in zip(x[:-1], x[1:]) if (a < 0) != (b < 0))
-        rows.append(f"({i}, {rate}, {ns}, {ns / rate!r}, {rms!r}, {zc})")
-    return _audio_feature_values_sql(rows)
-
-
-@register("multimodal_aiff_features", _aiff_fixture_sql())
-def multimodal_aiff_features(spark, sf_dir):
-    """REAL AIFF (Apple IFF-85) audio decode end to end: big-endian chunk
-    walk, COMM's 80-bit IEEE extended-float sample rate, SSND offset,
-    big-endian PCM (sources/multimodal.decode_aiff) — the byte-order
-    mirror of the RIFF/WAV path, dispatched off the FORM magic."""
-    from .sources.multimodal import (
-        extract_audio_features,
-        synthetic_aiff_media,
-    )
-    out = extract_audio_features(synthetic_aiff_media(spark, 24))
-    return out.select("media_id",
-                      F.col("sample_rate").cast("int").alias("sample_rate"),
-                      F.col("n_samples").cast("long").alias("n_samples"),
-                      "duration_s", "rms",
-                      F.col("zero_crossings").cast("long")
-                      .alias("zero_crossings"))
-
-
-_AUC_SQL = """
-WITH s0 AS (
-  SELECT user_id,
-         CAST(sum(CASE WHEN event_type <> 'purchase' THEN 1 ELSE 0 END)
-              AS HUGEINT) AS score,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                  THEN CAST(floor("value" * 100 + 0.5) AS HUGEINT)
-                  ELSE 0 END) AS HUGEINT) AS spend
-  FROM events GROUP BY 1
-), sm AS (
-  SELECT user_id, score, spend,
-         row_number() OVER (ORDER BY spend, user_id) AS rn,
-         count(*) OVER () AS n
-  FROM s0
-), med AS (SELECT spend AS m FROM sm WHERE rn = (n + 1) // 2),
-u AS (
-  SELECT user_id, score,
-         CASE WHEN spend > (SELECT m FROM med) THEN 1 ELSE 0 END AS pos
-  FROM s0
-), r AS (
-  SELECT pos,
-         CAST(rank() OVER (ORDER BY score) AS HUGEINT)
-           + CAST(rank() OVER (ORDER BY score) AS HUGEINT)
-           + CAST(count(*) OVER (PARTITION BY score) AS HUGEINT) - 1
-           AS mid2
-  FROM u
-), agg AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n,
-         CAST(sum(pos) AS HUGEINT) AS np,
-         sum(CASE WHEN pos = 1 THEN mid2 ELSE 0 END) AS smid2
-  FROM r
-)
-SELECT CAST(n AS BIGINT) AS n_users, CAST(np AS BIGINT) AS n_pos,
-       CAST(n - np AS BIGINT) AS n_neg,
-       CAST((smid2 - np * (np + 1)) * 1000000
-            // (2 * np * (n - np)) AS BIGINT) AS auc_e6,
-       CAST((smid2 - np * (np + 1)) * 2000000
-            // (2 * np * (n - np)) - 1000000 AS BIGINT) AS gini_e6
-FROM agg
-"""
-
-
-@register("q_events_auc_roc", _AUC_SQL)
-def q_events_auc_roc(spark, sf_dir):
-    """Exact tie-aware AUC-ROC of 'does non-purchase activity volume
-    predict spend': per-user score = count of non-purchase events, label =
-    total purchase value above the lower-median user spend (an exact-cents
-    median split, so both classes are always populated and the threshold
-    is data-derived identically in both engines). AUC via the
-    Mann-Whitney rank identity with
-    MIDRANKS kept exact as integers (2·midrank = 2·min_rank + ties − 1,
-    so AUC_e6 = (Σ2r₊ − n₊(n₊+1))·10⁶ div (2n₊n₋) never forms a float),
-    plus the Gini coefficient 2·AUC−1. One per-user aggregate, one global
-    rank window — the standard model-evaluation metric as a first-class
-    engine op, order-independent by construction."""
-    e = _t(spark, sf_dir, "events")
-    s0 = e.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") != "purchase", 1).otherwise(0))
-        .cast("decimal(38,0)").alias("score"),
-        F.sum(F.when(F.col("event_type") == "purchase",
-                     F.floor(F.col("value") * 100 + F.lit(0.5)))
-              .otherwise(0)).cast("decimal(38,0)").alias("spend"))
-    sm = s0.select(
-        "spend",
-        F.row_number().over(Window.orderBy("spend", "user_id"))
-        .alias("rn"),
-        F.count(F.lit(1)).over(Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("n"))
-    med = (sm.filter(F.expr("rn = (n + 1) div 2"))
-           .select(F.col("spend").alias("m")))
-    u = (s0.crossJoin(F.broadcast(med))
-         .select("user_id", "score",
-                 F.when(F.col("spend") > F.col("m"), 1).otherwise(0)
-                 .alias("pos")))
-    r = u.select(
-        "pos",
-        (F.rank().over(Window.orderBy("score")).cast("decimal(38,0)") * 2
-         + F.count(F.lit(1)).over(Window.partitionBy("score"))
-         .cast("decimal(38,0)") - 1).alias("mid2"))
-    agg = r.agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-        F.sum("pos").cast("decimal(38,0)").alias("np"),
-        F.sum(F.when(F.col("pos") == 1, F.col("mid2"))
-              .otherwise(F.lit(0).cast("decimal(38,0)"))).alias("smid2"))
-    return agg.select(
-        F.col("n").cast("long").alias("n_users"),
-        F.col("np").cast("long").alias("n_pos"),
-        F.expr("CAST(n - np AS BIGINT)").alias("n_neg"),
-        F.expr("CAST((smid2 - np * (np + 1)) * 1000000"
-               " div (2 * np * (n - np)) AS BIGINT)").alias("auc_e6"),
-        F.expr("CAST((smid2 - np * (np + 1)) * 2000000"
-               " div (2 * np * (n - np)) - 1000000 AS BIGINT)")
-        .alias("gini_e6"))
-
-
-_GAINS_SQL = """
-WITH s0 AS (
-  SELECT user_id,
-         CAST(sum(CASE WHEN event_type <> 'purchase' THEN 1 ELSE 0 END)
-              AS HUGEINT) AS score,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                  THEN CAST(floor("value" * 100 + 0.5) AS HUGEINT)
-                  ELSE 0 END) AS HUGEINT) AS spend
-  FROM events GROUP BY 1
-), sm AS (
-  SELECT user_id, score, spend,
-         row_number() OVER (ORDER BY spend, user_id) AS rn,
-         count(*) OVER () AS n
-  FROM s0
-), med AS (SELECT spend AS m FROM sm WHERE rn = (n + 1) // 2),
-u AS (
-  SELECT user_id, score,
-         CASE WHEN spend > (SELECT m FROM med) THEN 1 ELSE 0 END AS pos
-  FROM s0
-), d AS (
-  SELECT pos, ntile(10) OVER (ORDER BY score DESC, user_id) AS decile
-  FROM u
-), g AS (
-  SELECT decile, CAST(count(*) AS HUGEINT) AS n_users,
-         CAST(sum(pos) AS HUGEINT) AS n_pos
-  FROM d GROUP BY 1
-), c AS (
-  SELECT decile, n_users, n_pos,
-         sum(n_users) OVER (ORDER BY decile) AS cum_users,
-         sum(n_pos) OVER (ORDER BY decile) AS cum_pos,
-         sum(n_users) OVER () AS tot_users,
-         sum(n_pos) OVER () AS tot_pos
-  FROM g
-)
-SELECT CAST(decile AS INTEGER) AS decile,
-       CAST(n_users AS BIGINT) AS n_users, CAST(n_pos AS BIGINT) AS n_pos,
-       CAST(cum_pos * 1000000 // tot_pos AS BIGINT) AS capture_e6,
-       CAST(cum_pos * tot_users * 1000000
-            // (cum_users * tot_pos) AS BIGINT) AS cum_lift_e6
-FROM c
-"""
-
-
-@register("q_events_gains_deciles", _GAINS_SQL)
-def q_events_gains_deciles(spark, sf_dir):
-    """Decile gains/lift table for the activity-volume spend score (the
-    campaign-targeting companion to q_events_auc_roc, same median-split
-    label): users ranked
-    by score into NTILE(10) with a deterministic user_id tie-break, per
-    decile the positive capture rate (cumulative share of all converters
-    reached) and cumulative lift vs random targeting — both exact-integer
-    e6 ratios. One aggregate, one ranked window, one running sum."""
-    e = _t(spark, sf_dir, "events")
-    s0 = e.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") != "purchase", 1).otherwise(0))
-        .cast("decimal(38,0)").alias("score"),
-        F.sum(F.when(F.col("event_type") == "purchase",
-                     F.floor(F.col("value") * 100 + F.lit(0.5)))
-              .otherwise(0)).cast("decimal(38,0)").alias("spend"))
-    sm = s0.select(
-        "spend",
-        F.row_number().over(Window.orderBy("spend", "user_id"))
-        .alias("rn"),
-        F.count(F.lit(1)).over(Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("n"))
-    med = (sm.filter(F.expr("rn = (n + 1) div 2"))
-           .select(F.col("spend").alias("m")))
-    u = (s0.crossJoin(F.broadcast(med))
-         .select("user_id", "score",
-                 F.when(F.col("spend") > F.col("m"), 1).otherwise(0)
-                 .alias("pos")))
-    d = u.select(
-        "pos", F.ntile(10).over(
-            Window.orderBy(F.col("score").desc(), F.col("user_id")))
-        .alias("decile"))
-    g = d.groupBy("decile").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n_users"),
-        F.sum("pos").cast("decimal(38,0)").alias("n_pos"))
-    wc = Window.orderBy("decile").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    wt = Window.rowsBetween(Window.unboundedPreceding,
-                            Window.unboundedFollowing)
-    c = g.select(
-        "decile", "n_users", "n_pos",
-        F.sum("n_users").over(wc).alias("cum_users"),
-        F.sum("n_pos").over(wc).alias("cum_pos"),
-        F.sum("n_users").over(wt).alias("tot_users"),
-        F.sum("n_pos").over(wt).alias("tot_pos"))
-    return c.select(
-        F.col("decile").cast("int").alias("decile"),
-        F.col("n_users").cast("long").alias("n_users"),
-        F.col("n_pos").cast("long").alias("n_pos"),
-        F.expr("CAST(cum_pos * 1000000 div tot_pos AS BIGINT)")
-        .alias("capture_e6"),
-        F.expr("CAST(cum_pos * tot_users * 1000000"
-               " div (cum_users * tot_pos) AS BIGINT)")
-        .alias("cum_lift_e6"))
-
-
-_LABEL_SQL_PREFIX = """
-WITH s0 AS (
-  SELECT user_id,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                  THEN CAST(floor("value" * 100 + 0.5) AS HUGEINT)
-                  ELSE 0 END) AS HUGEINT) AS spend
-  FROM events GROUP BY 1
-), sm AS (
-  SELECT spend, row_number() OVER (ORDER BY spend, user_id) AS rn,
-         count(*) OVER () AS n
-  FROM s0
-), med AS (SELECT spend AS m FROM sm WHERE rn = (n + 1) // 2),
-lab AS (
-  SELECT user_id,
-         CASE WHEN spend > (SELECT m FROM med) THEN 1 ELSE 0 END AS y
-  FROM s0
-)"""
-
-_MI_SQL = _LABEL_SQL_PREFIX + """,
-cells AS (
-  SELECT e.event_type, lab.y, CAST(count(*) AS HUGEINT) AS nxy
-  FROM events e JOIN lab ON lab.user_id = e.user_id
-  GROUP BY 1, 2
-), mx AS (
-  SELECT event_type, CAST(sum(nxy) AS HUGEINT) AS nx FROM cells GROUP BY 1
-), my AS (SELECT y, CAST(sum(nxy) AS HUGEINT) AS ny FROM cells GROUP BY 1),
-tot AS (SELECT CAST(sum(nxy) AS HUGEINT) AS nn FROM cells)
-SELECT c.event_type,
-       CAST(mx.nx AS BIGINT) AS n_events,
-       CAST(sum(CASE WHEN c.y = 1 THEN c.nxy ELSE 0 END) AS BIGINT)
-           AS n_pos_label,
-       CAST(sum(CAST(floor(
-         (CAST(c.nxy AS DOUBLE) / CAST(tot.nn AS DOUBLE))
-         * ln((CAST(c.nxy AS DOUBLE) * CAST(tot.nn AS DOUBLE))
-              / (CAST(mx.nx AS DOUBLE) * CAST(my.ny AS DOUBLE)))
-         * 1000000000 + 0.5) AS BIGINT)) AS BIGINT) AS mi_contrib_e9
-FROM cells c
-JOIN mx ON mx.event_type = c.event_type
-JOIN my ON my.y = c.y
-CROSS JOIN tot
-GROUP BY 1, 2
-"""
-
-
-@register("q_events_mutual_information", _MI_SQL)
-def q_events_mutual_information(spark, sf_dir):
-    """Mutual-information feature relevance: how much does each event
-    type's occurrence tell you about the user's spend class (the
-    median-split label q_events_auc_roc uses)? Per-feature contribution
-    Σ_y p(x,y)·ln(p(x,y)/(p(x)p(y))) with the repo's JSD discipline —
-    every per-cell term is a double computed from EXACT integer counts by
-    identically-shaped expressions in both engines, e9-floored before the
-    integer sum, so the aggregate is order-independent and hash-exact.
-    Information-gain feature selection as a first-class engine op (the
-    entropy-based sibling of text_keyword_chi2). One events×label
-    broadcast join, one 10-cell contingency aggregate."""
-    e = _t(spark, sf_dir, "events")
-    s0 = e.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == "purchase",
-                     F.floor(F.col("value") * 100 + F.lit(0.5)))
-              .otherwise(0)).cast("decimal(38,0)").alias("spend"))
-    sm = s0.select(
-        "spend",
-        F.row_number().over(Window.orderBy("spend", "user_id")).alias("rn"),
-        F.count(F.lit(1)).over(Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("n"))
-    med = (sm.filter(F.expr("rn = (n + 1) div 2"))
-           .select(F.col("spend").alias("m")))
-    lab = (s0.crossJoin(F.broadcast(med))
-           .select("user_id",
-                   F.when(F.col("spend") > F.col("m"), 1).otherwise(0)
-                   .alias("y")))
-    cells = (e.join(lab, "user_id")
-             .groupBy("event_type", "y")
-             .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("nxy")))
-    mx = cells.groupBy("event_type").agg(F.sum("nxy").alias("nx"))
-    my = cells.groupBy("y").agg(F.sum("nxy").alias("ny"))
-    tot = cells.agg(F.sum("nxy").alias("nn"))
-    return (cells.join(mx, "event_type").join(F.broadcast(my), "y")
-            .crossJoin(F.broadcast(tot))
-            .groupBy("event_type", F.col("nx"))
-            .agg(F.sum(F.when(F.col("y") == 1, F.col("nxy"))
-                       .otherwise(F.lit(0).cast("decimal(38,0)")))
-                 .cast("long").alias("n_pos_label"),
-                 F.sum(F.expr(
-                     "CAST(floor((CAST(nxy AS DOUBLE) / CAST(nn AS DOUBLE))"
-                     " * ln((CAST(nxy AS DOUBLE) * CAST(nn AS DOUBLE))"
-                     " / (CAST(nx AS DOUBLE) * CAST(ny AS DOUBLE)))"
-                     " * 1000000000 + 0.5) AS BIGINT)"))
-                 .cast("long").alias("mi_contrib_e9"))
-            .select("event_type", F.col("nx").cast("long").alias("n_events"),
-                    "n_pos_label", "mi_contrib_e9"))
-
-
-_LOO_SQL = _LABEL_SQL_PREFIX + """,
-cat AS (
-  SELECT e.event_type, CAST(count(*) AS HUGEINT) AS cnt,
-         CAST(sum(lab.y) AS HUGEINT) AS pos
-  FROM events e JOIN lab ON lab.user_id = e.user_id GROUP BY 1
-), g AS (
-  SELECT CAST(count(*) AS HUGEINT) AS t, CAST(sum(y) AS HUGEINT) AS p
-  FROM lab
-)
-SELECT e.event_id, e.event_type, CAST(lab.y AS INTEGER) AS y,
-       CAST(((cat.pos - lab.y) * g.t + 10 * g.p) * 1000000
-            // ((cat.cnt - 1 + 10) * g.t) AS BIGINT) AS loo_encode_e6
-FROM events e
-JOIN lab ON lab.user_id = e.user_id
-JOIN cat ON cat.event_type = e.event_type
-CROSS JOIN g
-"""
-
-
-@register("q_events_target_encoding", _LOO_SQL)
-def q_events_target_encoding(spark, sf_dir):
-    """Leave-one-out smoothed target encoding of event_type against the
-    median-spend label — the leakage-safe categorical encoder every
-    tabular-ML pipeline ships: encode(row) = (pos_c − y_row + α·prior) /
-    (cnt_c − 1 + α) with α=10 and prior = global positive rate, kept
-    EXACT by cross-multiplying the rational prior (numerator (pos_c −
-    y)·T + 10·P over denominator (cnt_c − 1 + 10)·T, all HUGEINT, one e6
-    floor division). Subtracting the row's own label is what prevents
-    target leakage; the smoothing shrinks rare categories toward the
-    prior. Per-row output keyed by event_id. One broadcast label join +
-    one category aggregate — map-side combinable at any scale."""
-    e = _t(spark, sf_dir, "events")
-    s0 = e.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == "purchase",
-                     F.floor(F.col("value") * 100 + F.lit(0.5)))
-              .otherwise(0)).cast("decimal(38,0)").alias("spend"))
-    sm = s0.select(
-        "spend",
-        F.row_number().over(Window.orderBy("spend", "user_id")).alias("rn"),
-        F.count(F.lit(1)).over(Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("n"))
-    med = (sm.filter(F.expr("rn = (n + 1) div 2"))
-           .select(F.col("spend").alias("m")))
-    lab = (s0.crossJoin(F.broadcast(med))
-           .select("user_id",
-                   F.when(F.col("spend") > F.col("m"), 1).otherwise(0)
-                   .alias("y")))
-    ey = e.join(lab, "user_id")
-    cat = (ey.groupBy("event_type")
-           .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("cnt"),
-                F.sum("y").cast("decimal(38,0)").alias("pos")))
-    g = lab.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("t"),
-                F.sum("y").cast("decimal(38,0)").alias("p"))
-    return (ey.join(F.broadcast(cat), "event_type")
-            .crossJoin(F.broadcast(g))
-            .select("event_id", "event_type",
-                    F.col("y").cast("int").alias("y"),
-                    F.expr("CAST(((pos - y) * t + 10 * p) * 1000000"
-                           " div ((cnt - 1 + 10) * t) AS BIGINT)")
-                    .alias("loo_encode_e6")))
-
-
-_ISOTONIC_SQL = _LABEL_SQL_PREFIX + """,
-act AS (
-  SELECT e.user_id, CAST(count(*) AS HUGEINT) AS score
-  FROM events e WHERE e.event_type <> 'purchase' GROUP BY 1
-), pts AS (
-  SELECT act.score, CAST(count(*) AS HUGEINT) AS cnt,
-         CAST(sum(lab.y) AS HUGEINT) AS pos
-  FROM act JOIN lab ON lab.user_id = act.user_id GROUP BY 1
-), idx AS (
-  SELECT score, cnt, pos,
-         row_number() OVER (ORDER BY score) AS i,
-         sum(cnt) OVER (ORDER BY score) AS ccnt,
-         sum(pos) OVER (ORDER BY score) AS cpos
-  FROM pts
-), pre AS (
-  SELECT i, ccnt, cpos FROM idx
-  UNION ALL SELECT 0, 0, 0
-), seg AS (
-  SELECT a.i AS j, b.i AS k,
-         (b.cpos - a.cpos) AS p, (b.ccnt - a.ccnt) AS q
-  FROM pre a JOIN pre b ON b.i > a.i
-), inner_min AS (
-  SELECT i.i, s.j,
-         min(s.p * 1000000000000 // s.q) AS mn,
-         min_by(s.p, s.p * 1000000000000 // s.q) AS mp,
-         min_by(s.q, s.p * 1000000000000 // s.q) AS mq
-  FROM idx i JOIN seg s ON s.j < i.i AND s.k >= i.i
-  GROUP BY 1, 2
-), outer_max AS (
-  SELECT i, max_by(mp, mn) AS fp, max_by(mq, mn) AS fq
-  FROM inner_min GROUP BY 1
-)
-SELECT CAST(idx.score AS BIGINT) AS score,
-       CAST(idx.cnt AS BIGINT) AS n_users,
-       CAST(idx.pos AS BIGINT) AS n_pos,
-       CAST(idx.pos * 1000000 // idx.cnt AS BIGINT) AS raw_rate_e6,
-       CAST(om.fp * 1000000 // om.fq AS BIGINT) AS iso_rate_e6
-FROM idx JOIN outer_max om ON om.i = idx.i
-"""
-
-
-@register("q_events_isotonic_calibration", _ISOTONIC_SQL)
-def q_events_isotonic_calibration(spark, sf_dir):
-    """Isotonic regression (PAVA) calibrating activity volume → spend
-    propensity: the monotone-nondecreasing step function closest in
-    weighted L2 to the per-score positive rates — THE standard probability
-    calibrator. Two genuinely independent algorithms must agree
-    hash-exact: the engine runs exact-integer pool-adjacent-violators
-    (stack merges compared by cross-multiplication, no float) on the
-    vocabulary-bounded (score → count, positives) aggregate; the oracle
-    evaluates the minimax identity fit_i = max_{j≤i} min_{k≥i}
-    mean(y[j..k]) over prefix sums, with rationals ordered by their
-    e12-floored quotient (exact while Σcount < 10⁶: distinct rationals
-    with denominators ≤ q differ by ≥ 1/q², so e12 floors separate them)
-    and the winning pool emitted as an exact e6 rate. The data-sized work
-    is one per-user aggregate; PAVA runs on the bounded curve."""
-    e = _t(spark, sf_dir, "events")
-    s0 = e.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == "purchase",
-                     F.floor(F.col("value") * 100 + F.lit(0.5)))
-              .otherwise(0)).cast("decimal(38,0)").alias("spend"),
-        F.sum(F.when(F.col("event_type") != "purchase", 1).otherwise(0))
-        .cast("long").alias("score"))
-    sm = s0.select(
-        "spend",
-        F.row_number().over(Window.orderBy("spend", "user_id")).alias("rn"),
-        F.count(F.lit(1)).over(Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("n"))
-    med = (sm.filter(F.expr("rn = (n + 1) div 2"))
-           .select(F.col("spend").alias("m")))
-    pts = (s0.crossJoin(F.broadcast(med))
-           .select("score",
-                   F.when(F.col("spend") > F.col("m"), 1).otherwise(0)
-                   .alias("y"))
-           .groupBy("score")
-           .agg(F.count(F.lit(1)).cast("long").alias("cnt"),
-                F.sum("y").cast("long").alias("pos"))
-           .orderBy("score"))
-    rows = pts.collect()  # vocabulary-bounded calibration curve
-    pools: list = []  # [score_list, cnt, pos]
-    for r in rows:
-        pools.append([[int(r["score"])], int(r["cnt"]), int(r["pos"])])
-        while (len(pools) >= 2
-               and pools[-2][2] * pools[-1][1]
-               > pools[-1][2] * pools[-2][1]):   # prev mean > cur mean
-            s2, c2, p2 = pools.pop()
-            pools[-1][0].extend(s2)
-            pools[-1][1] += c2
-            pools[-1][2] += p2
-    fit = {}
-    for scores, c, p in pools:
-        for s in scores:
-            fit[s] = (p, c)
-    out = [(int(r["score"]), int(r["cnt"]), int(r["pos"]),
-            int(r["pos"]) * 1_000_000 // int(r["cnt"]),
-            fit[int(r["score"])][0] * 1_000_000 // fit[int(r["score"])][1])
-           for r in rows]
-    return spark.createDataFrame(
-        out, "score long, n_users long, n_pos long, raw_rate_e6 long,"
-             " iso_rate_e6 long")
-
-
-_NB_SQL = """
-WITH tok AS (
-  SELECT doc_id, lang, t AS w, CAST(count(*) AS BIGINT) AS tf
-  FROM (SELECT doc_id, lang, unnest(string_split(text, ' ')) AS t
-        FROM documents)
-  WHERE t <> '' GROUP BY 1, 2, 3
-), voc AS (
-  SELECT CAST(count(DISTINCT w) AS BIGINT) AS v FROM tok
-), cls AS (
-  SELECT lang AS c, CAST(sum(tf) AS BIGINT) AS tot,
-         CAST(count(DISTINCT doc_id) AS BIGINT) AS nd
-  FROM tok GROUP BY 1
-), nn AS (SELECT CAST(sum(nd) AS BIGINT) AS n FROM cls),
-wc AS (
-  SELECT w, lang AS c, CAST(sum(tf) AS BIGINT) AS cnt
-  FROM tok GROUP BY 1, 2
-), terms AS (
-  SELECT wc.w, wc.c,
-         CAST(floor(ln(CAST(wc.cnt + 1 AS DOUBLE)
-                       / CAST(cls.tot + voc.v AS DOUBLE))
-                    * 1000000000 + 0.5) AS BIGINT) AS t_e9
-  FROM wc JOIN cls ON cls.c = wc.c CROSS JOIN voc
-), dflt AS (
-  SELECT cls.c,
-         CAST(floor(ln(1.0 / CAST(cls.tot + voc.v AS DOUBLE))
-                    * 1000000000 + 0.5) AS BIGINT) AS d_e9,
-         CAST(floor(ln(CAST(cls.nd AS DOUBLE) / CAST(nn.n AS DOUBLE))
-                    * 1000000000 + 0.5) AS BIGINT) AS prior_e9
-  FROM cls CROSS JOIN nn CROSS JOIN voc
-), scores AS (
-  SELECT tok.doc_id, tok.lang AS actual, dflt.c,
-         max(dflt.prior_e9)
-           + sum(tok.tf * coalesce(terms.t_e9, dflt.d_e9)) AS score_e9
-  FROM tok CROSS JOIN dflt
-  LEFT JOIN terms ON terms.w = tok.w AND terms.c = dflt.c
-  GROUP BY 1, 2, 3
-), pred AS (
-  SELECT doc_id, actual, c AS predicted
-  FROM (SELECT doc_id, actual, c,
-               row_number() OVER (PARTITION BY doc_id
-                                  ORDER BY score_e9 DESC, c) AS rn
-        FROM scores)
-  WHERE rn = 1
-)
-SELECT actual AS actual_lang, predicted AS predicted_lang,
-       CAST(count(*) AS BIGINT) AS n_docs
-FROM pred GROUP BY 1, 2
-"""
-
-
-@register("text_naive_bayes_lang", _NB_SQL)
-def text_naive_bayes_lang(spark, sf_dir):
-    """Multinomial Naive Bayes language classifier trained and evaluated
-    on the documents table (resubstitution confusion matrix) — a REAL
-    trained model as an engine op, not a heuristic: Laplace-smoothed
-    per-(word, class) log-likelihoods ln((cnt+1)/(tot_c+V)) and class
-    priors are e9-floored ONCE per vocabulary entry (exact-integer-ratio
-    doubles, identical in both engines), per-document class scores are
-    then EXACT integer sums Σ tf·term, and the argmax is tie-broken by
-    class name — fully order-independent. Plan: one token aggregate, one
-    31×5 term table broadcast, one grouped sum per (doc, class); the
-    vocabulary-bounded model never shuffles with the data."""
-    d = _t(spark, sf_dir, "documents")
-    tok = (d.select("doc_id", "lang",
-                    F.explode(F.split(F.col("text"), " ")).alias("w"))
-           .filter(F.col("w") != "")
-           .groupBy("doc_id", "lang", "w")
-           .agg(F.count(F.lit(1)).cast("long").alias("tf")))
-    voc = tok.agg(F.countDistinct("w").cast("long").alias("v"))
-    cls = (tok.groupBy(F.col("lang").alias("c"))
-           .agg(F.sum("tf").cast("long").alias("tot"),
-                F.countDistinct("doc_id").cast("long").alias("nd")))
-    nn = cls.agg(F.sum("nd").cast("long").alias("n"))
-    wc = (tok.groupBy("w", F.col("lang").alias("c"))
-          .agg(F.sum("tf").cast("long").alias("cnt")))
-    terms = (wc.join(cls, "c").crossJoin(F.broadcast(voc))
-             .select("w", "c", F.expr(
-                 "CAST(floor(ln(CAST(cnt + 1 AS DOUBLE)"
-                 " / CAST(tot + v AS DOUBLE)) * 1000000000 + 0.5)"
-                 " AS BIGINT)").alias("t_e9")))
-    dflt = (cls.crossJoin(F.broadcast(nn)).crossJoin(F.broadcast(voc))
-            .select("c", F.expr(
-                "CAST(floor(ln(1.0 / CAST(tot + v AS DOUBLE))"
-                " * 1000000000 + 0.5) AS BIGINT)").alias("d_e9"),
-                F.expr(
-                "CAST(floor(ln(CAST(nd AS DOUBLE) / CAST(n AS DOUBLE))"
-                " * 1000000000 + 0.5) AS BIGINT)").alias("prior_e9")))
-    scores = (tok.crossJoin(F.broadcast(dflt))
-              .join(F.broadcast(terms), ["w", "c"], "left")
-              .groupBy("doc_id", F.col("lang").alias("actual"), "c")
-              .agg((F.max("prior_e9")
-                    + F.sum(F.col("tf")
-                            * F.coalesce(F.col("t_e9"), F.col("d_e9"))))
-                   .alias("score_e9")))
-    pred = (scores.groupBy("doc_id", "actual")
-            .agg(F.min_by(
-                "c", F.struct((-F.col("score_e9")).alias("ns"),
-                              F.col("c").alias("c"))).alias("predicted")))
-    return (pred.groupBy(F.col("actual").alias("actual_lang"),
-                         F.col("predicted").alias("predicted_lang"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs")))
-
-
-_STUMP_SQL = _LABEL_SQL_PREFIX + """,
-act AS (
-  SELECT e.user_id, CAST(count(*) AS HUGEINT) AS score
-  FROM events e WHERE e.event_type <> 'purchase' GROUP BY 1
-), pts AS (
-  SELECT act.score, CAST(count(*) AS HUGEINT) AS cnt,
-         CAST(sum(lab.y) AS HUGEINT) AS pos
-  FROM act JOIN lab ON lab.user_id = act.user_id GROUP BY 1
-), cum AS (
-  SELECT score,
-         sum(cnt) OVER (ORDER BY score) AS nl,
-         sum(pos) OVER (ORDER BY score) AS pl,
-         sum(cnt) OVER () AS n, sum(pos) OVER () AS p
-  FROM pts
-), splits AS (
-  SELECT score AS threshold, nl, pl, n - nl AS nr, p - pl AS pr,
-         (pl * pl * (n - nl) + (p - pl) * (p - pl) * nl) AS a,
-         nl * (n - nl) AS b
-  FROM cum WHERE nl < n
-), keyed AS (
-  SELECT threshold, nl, pl, nr, pr,
-         a * 1000000000000000000 // b AS k,
-         a * 1000000 // b AS obj_e6
-  FROM splits
-)
-SELECT CAST(threshold AS BIGINT) AS threshold,
-       CAST(nl AS BIGINT) AS n_le, CAST(pl AS BIGINT) AS pos_le,
-       CAST(nr AS BIGINT) AS n_gt, CAST(pr AS BIGINT) AS pos_gt,
-       CAST(obj_e6 AS BIGINT) AS objective_e6
-FROM (SELECT *, row_number() OVER (ORDER BY k DESC, threshold) AS rn
-      FROM keyed)
-WHERE rn = 1
-"""
-
-
-@register("q_events_decision_stump", _STUMP_SQL)
-def q_events_decision_stump(spark, sf_dir):
-    """CART decision stump on activity volume vs the median-spend label:
-    the single threshold maximizing Σ_side pos²/n — weighted-variance
-    reduction, which for a binary target is EXACTLY the Gini-gain argmax.
-    The objective is a rational (p_l²·n_r + p_r²·n_l)/(n_l·n_r) compared
-    EXACTLY across splits via its e18-floored quotient (denominators are
-    ≤ (N/2)², so distinct rationals differ by ≥ 1/b² and e18 floors
-    separate them through N ≈ 10⁶ users; numerator·10¹⁸ stays under
-    HUGEINT/decimal(38)), tie-broken by the smaller threshold. One
-    per-user aggregate + one running-sum window over the bounded score
-    curve — every candidate split evaluated in a single pass, no
-    iteration."""
-    e = _t(spark, sf_dir, "events")
-    s0 = e.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == "purchase",
-                     F.floor(F.col("value") * 100 + F.lit(0.5)))
-              .otherwise(0)).cast("decimal(38,0)").alias("spend"),
-        F.sum(F.when(F.col("event_type") != "purchase", 1).otherwise(0))
-        .cast("long").alias("score"))
-    sm = s0.select(
-        "spend",
-        F.row_number().over(Window.orderBy("spend", "user_id")).alias("rn"),
-        F.count(F.lit(1)).over(Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("n"))
-    med = (sm.filter(F.expr("rn = (n + 1) div 2"))
-           .select(F.col("spend").alias("m")))
-    pts = (s0.crossJoin(F.broadcast(med))
-           .select("score",
-                   F.when(F.col("spend") > F.col("m"), 1).otherwise(0)
-                   .alias("y"))
-           .groupBy("score")
-           .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("cnt"),
-                F.sum("y").cast("decimal(38,0)").alias("pos")))
-    wo = Window.orderBy("score").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow)
-    wt = Window.rowsBetween(Window.unboundedPreceding,
-                            Window.unboundedFollowing)
-    cum = pts.select(
-        "score",
-        F.sum("cnt").over(wo).alias("nl"), F.sum("pos").over(wo).alias("pl"),
-        F.sum("cnt").over(wt).alias("n"), F.sum("pos").over(wt).alias("p"))
-    keyed = (cum.filter(F.col("nl") < F.col("n"))
-             .select(F.col("score").alias("threshold"),
-                     "nl", "pl",
-                     F.expr("n - nl").alias("nr"),
-                     F.expr("p - pl").alias("pr"),
-                     F.expr("(pl * pl * (n - nl)"
-                            " + (p - pl) * (p - pl) * nl)").alias("a"),
-                     F.expr("nl * (n - nl)").alias("b"))
-             .select("threshold", "nl", "pl", "nr", "pr",
-                     F.expr("a * 1000000000000000000 div b").alias("k"),
-                     F.expr("a * 1000000 div b").alias("obj_e6")))
-    return (keyed.select(
-        "*", F.row_number().over(
-            Window.orderBy(F.col("k").desc(), F.col("threshold")))
-        .alias("rn"))
-        .filter(F.col("rn") == 1)
-        .select(F.col("threshold").cast("long").alias("threshold"),
-                F.col("nl").cast("long").alias("n_le"),
-                F.col("pl").cast("long").alias("pos_le"),
-                F.col("nr").cast("long").alias("n_gt"),
-                F.col("pr").cast("long").alias("pos_gt"),
-                F.col("obj_e6").cast("long").alias("objective_e6")))
-
-
-_IMR_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS HUGEINT) AS y
-  FROM events GROUP BY 1
-), mr AS (
-  SELECT d, y,
-         abs(y - lag(y) OVER (ORDER BY d)) AS mrv
-  FROM daily
-), s AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(y) AS sy,
-         CAST(count(mrv) AS HUGEINT) AS m, sum(mrv) AS smr
-  FROM mr
-)
-SELECT mr.d AS day, CAST(mr.y AS BIGINT) AS n_events,
-       CAST(mr.mrv AS BIGINT) AS moving_range,
-       CAST(s.sy * 1000000 // s.n AS BIGINT) AS center_e6,
-       CAST((s.sy * s.m * 100 + 266 * s.smr * s.n) * 1000000
-            // (100 * s.n * s.m) AS BIGINT) AS ucl_e6,
-       CAST((s.sy * s.m * 100 - 266 * s.smr * s.n) * 1000000
-            // (100 * s.n * s.m) AS BIGINT) AS lcl_e6,
-       CASE WHEN mr.y * 100 * s.n * s.m > s.sy * s.m * 100
-                 + 266 * s.smr * s.n
-            OR mr.y * 100 * s.n * s.m < s.sy * s.m * 100
-                 - 266 * s.smr * s.n
-            THEN 1 ELSE 0 END AS out_of_control
-FROM mr CROSS JOIN s
-"""
-
-
-@register("q_events_imr_chart", _IMR_SQL)
-def q_events_imr_chart(spark, sf_dir):
-    """Individuals / moving-range (I-MR) control chart over daily volume —
-    the SPC chart for continuous one-at-a-time observations that
-    q_events_pchart's binomial limits don't cover: center = mean, limits
-    = mean ± 2.66·(mean moving range) with 2.66 kept as the exact
-    rational 266/100, every limit an exact integer e6 floor over the
-    common denominator 100·n·m, and the out-of-control flag decided by
-    pure integer cross-multiplication (no float ever compares). One
-    daily aggregate, one lag window, one broadcast stats row."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("y")))
-    mr = daily.select(
-        "d", "y",
-        F.abs(F.col("y") - F.lag("y").over(Window.orderBy("d")))
-        .alias("mrv"))
-    s = mr.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-               F.sum("y").alias("sy"),
-               F.count("mrv").cast("decimal(38,0)").alias("m"),
-               F.sum("mrv").alias("smr"))
-    return (mr.crossJoin(F.broadcast(s))
-            .select(F.col("d").alias("day"),
-                    F.col("y").cast("long").alias("n_events"),
-                    F.col("mrv").cast("long").alias("moving_range"),
-                    F.expr("CAST(sy * 1000000 div n AS BIGINT)")
-                    .alias("center_e6"),
-                    F.expr("CAST((sy * m * 100 + 266 * smr * n) * 1000000"
-                           " div (100 * n * m) AS BIGINT)").alias("ucl_e6"),
-                    F.expr("CAST((sy * m * 100 - 266 * smr * n) * 1000000"
-                           " div (100 * n * m) AS BIGINT)").alias("lcl_e6"),
-                    F.expr("CASE WHEN y * 100 * n * m > sy * m * 100"
-                           " + 266 * smr * n"
-                           " OR y * 100 * n * m < sy * m * 100"
-                           " - 266 * smr * n THEN 1 ELSE 0 END")
-                    .cast("int").alias("out_of_control")))
-
-
-_BRIER_SQL = _LABEL_SQL_PREFIX + """,
-cat AS (
-  SELECT e.event_type, CAST(count(*) AS HUGEINT) AS cnt,
-         CAST(sum(lab.y) AS HUGEINT) AS pos
-  FROM events e JOIN lab ON lab.user_id = e.user_id GROUP BY 1
-), g AS (
-  SELECT CAST(count(*) AS HUGEINT) AS t, CAST(sum(y) AS HUGEINT) AS p
-  FROM lab
-), pr AS (
-  SELECT e.event_id, lab.y,
-         ((cat.pos - lab.y) * g.t + 10 * g.p) * 1000000
-           // ((cat.cnt - 1 + 10) * g.t) AS f_e6
-  FROM events e
-  JOIN lab ON lab.user_id = e.user_id
-  JOIN cat ON cat.event_type = e.event_type
-  CROSS JOIN g
-)
-SELECT CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum((f_e6 - y * 1000000) * (f_e6 - y * 1000000))
-            // (count(*) * 1000000) AS BIGINT) AS brier_e6,
-       CAST(sum(CASE WHEN y = 1 THEN 1000000 - f_e6 ELSE f_e6 END)
-            // count(*) AS BIGINT) AS mae_e6
-FROM pr
-"""
-
-
-@register("q_events_brier_score", _BRIER_SQL)
-def q_events_brier_score(spark, sf_dir):
-    """Brier score (mean squared error of predicted probability, the
-    strictly proper scoring rule) plus MAE for the leave-one-out target
-    encoder of q_events_target_encoding against the median-spend label:
-    predictions are the exact e6 rationals the encoder emits, so
-    Σ(f−y)² is an exact integer in e12 units floored once to e6 — the
-    model-quality read that closes the encode→calibrate→score loop
-    (q_events_target_encoding → q_events_isotonic_calibration → here).
-    One label join, one category aggregate, one global sum."""
-    e = _t(spark, sf_dir, "events")
-    s0 = e.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == "purchase",
-                     F.floor(F.col("value") * 100 + F.lit(0.5)))
-              .otherwise(0)).cast("decimal(38,0)").alias("spend"))
-    sm = s0.select(
-        "spend",
-        F.row_number().over(Window.orderBy("spend", "user_id")).alias("rn"),
-        F.count(F.lit(1)).over(Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("n"))
-    med = (sm.filter(F.expr("rn = (n + 1) div 2"))
-           .select(F.col("spend").alias("m")))
-    lab = (s0.crossJoin(F.broadcast(med))
-           .select("user_id",
-                   F.when(F.col("spend") > F.col("m"), 1).otherwise(0)
-                   .alias("y")))
-    ey = e.join(lab, "user_id")
-    cat = (ey.groupBy("event_type")
-           .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("cnt"),
-                F.sum("y").cast("decimal(38,0)").alias("pos")))
-    g = lab.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("t"),
-                F.sum("y").cast("decimal(38,0)").alias("p"))
-    pr = (ey.join(F.broadcast(cat), "event_type")
-          .crossJoin(F.broadcast(g))
-          .select(F.col("y").cast("decimal(38,0)").alias("y"),
-                  F.expr("((pos - y) * t + 10 * p) * 1000000"
-                         " div ((cnt - 1 + 10) * t)").alias("f_e6")))
-    return pr.agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.expr("CAST(sum((f_e6 - y * 1000000) * (f_e6 - y * 1000000))"
-               " div (count(1) * 1000000) AS BIGINT)").alias("brier_e6"),
-        F.expr("CAST(sum(CASE WHEN y = 1 THEN 1000000 - f_e6"
-               " ELSE f_e6 END) div count(1) AS BIGINT)").alias("mae_e6"))
-
-
-_WILCOXON_SQL = """
-WITH u AS (
-  SELECT user_id,
-         CAST(sum(CASE WHEN date_part('day', ts) > 15
-                  THEN CAST(floor("value" * 100 + 0.5) AS HUGEINT)
-                  ELSE -CAST(floor("value" * 100 + 0.5) AS HUGEINT)
-                  END) AS HUGEINT) AS d
-  FROM events GROUP BY 1
-), nz AS (SELECT d FROM u WHERE d <> 0),
-s AS (
-  SELECT abs(d) AS ad, CAST(count(*) AS HUGEINT) AS t,
-         CAST(count(*) FILTER (WHERE d > 0) AS HUGEINT) AS c1
-  FROM nz GROUP BY 1
-), w AS (
-  SELECT ad, t, c1,
-         coalesce(sum(t) OVER (ORDER BY ad
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS l
-  FROM s
-), agg AS (
-  SELECT sum(t) AS n, sum(c1 * (2 * l + t + 1)) AS wp2,
-         sum((t - c1) * (2 * l + t + 1)) AS wm2
-  FROM w
-), z AS (SELECT CAST(count(*) AS HUGEINT) AS n_zero FROM u WHERE d = 0)
-SELECT CAST(n AS BIGINT) AS n_pairs, CAST(z.n_zero AS BIGINT) AS n_zero,
-       CAST(wp2 AS BIGINT) AS w_plus_x2, CAST(wm2 AS BIGINT) AS w_minus_x2,
-       CAST((wp2 - wm2) * 1000000 // (n * (n + 1)) AS BIGINT)
-           AS rank_biserial_e6
-FROM agg CROSS JOIN z
-"""
-
-
-@register("q_events_wilcoxon_signed_rank", _WILCOXON_SQL)
-def q_events_wilcoxon_signed_rank(spark, sf_dir):
-    """Wilcoxon signed-rank test for a paired before/after comparison:
-    each user's total event value in the back half of the month (day>15)
-    minus the front half, zero differences dropped (classic Wilcoxon
-    discipline, their count reported as n_zero). Ranks of |d| are kept
-    DOUBLED so tied midranks stay integral (2·avgrank = 2L+T+1, the
-    q_events_mann_whitney discipline) and the matched rank-biserial
-    effect size (W⁺−W⁻)/(n(n+1)/2 · 2) lands as an exact e6 quotient —
-    the identity W⁺×2 + W⁻×2 = n(n+1) makes the denominator closed-form.
-    Plan: one user aggregate, then a groupBy on DISTINCT |d| before the
-    single ordered cumsum window, so window input is difference
-    cardinality, not user count — rank-over-raw-rows never happens."""
-    e = _t(spark, sf_dir, "events")
-    u = e.groupBy("user_id").agg(
-        F.sum(F.when(F.dayofmonth("ts") > 15,
-                     F.floor(F.col("value") * 100 + F.lit(0.5)))
-              .otherwise(-F.floor(F.col("value") * 100 + F.lit(0.5))))
-        .cast("decimal(38,0)").alias("d"))
-    nz = u.filter(F.col("d") != 0)
-    s = (nz.groupBy(F.abs(F.col("d")).alias("ad"))
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("t"),
-              F.sum(F.when(F.col("d") > 0, 1).otherwise(0))
-              .cast("decimal(38,0)").alias("c1")))
-    w = Window.orderBy("ad").rowsBetween(Window.unboundedPreceding, -1)
-    ranked = s.withColumn(
-        "l", F.coalesce(F.sum("t").over(w), F.lit(0).cast("decimal(38,0)")))
-    agg = ranked.agg(
-        F.sum("t").alias("n"),
-        F.sum(F.col("c1") * (F.lit(2) * F.col("l") + F.col("t") + 1))
-        .alias("wp2"),
-        F.sum((F.col("t") - F.col("c1"))
-              * (F.lit(2) * F.col("l") + F.col("t") + 1)).alias("wm2"))
-    z = u.filter(F.col("d") == 0).agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("n_zero"))
-    return (agg.crossJoin(F.broadcast(z))
-            .select(F.col("n").cast("long").alias("n_pairs"),
-                    F.col("n_zero").cast("long").alias("n_zero"),
-                    F.col("wp2").cast("long").alias("w_plus_x2"),
-                    F.col("wm2").cast("long").alias("w_minus_x2"),
-                    F.expr("CAST((wp2 - wm2) * 1000000 div (n * (n + 1))"
-                           " AS BIGINT)").alias("rank_biserial_e6")))
-
-
-_ANOVA_SQL = """
-WITH g AS (
-  SELECT event_type, CAST(count(*) AS HUGEINT) AS ng,
-         CAST(sum(CAST(floor("value" * 100 + 0.5) AS HUGEINT)) AS HUGEINT)
-             AS sg,
-         CAST(sum(CAST(floor("value" * 100 + 0.5) AS HUGEINT)
-                  * CAST(floor("value" * 100 + 0.5) AS HUGEINT)) AS HUGEINT)
-             AS qg
-  FROM events GROUP BY 1
-), a AS (
-  SELECT CAST(count(*) AS HUGEINT) AS k, sum(ng) AS n, sum(sg) AS s,
-         sum(qg) AS q, sum(sg * sg * 1000000 // ng) AS abetween
-  FROM g
-), f AS (
-  SELECT k, n, abetween - s * s * 1000000 // n AS ssb_e6,
-         q * 1000000 - abetween AS ssw_e6
-  FROM a
-)
-SELECT CAST(k AS BIGINT) AS n_groups, CAST(n AS BIGINT) AS n_rows,
-       CAST(ssb_e6 AS BIGINT) AS ssb_e6, CAST(ssw_e6 AS BIGINT) AS ssw_e6,
-       CAST(ssb_e6 * (n - k) * 1000000 // (ssw_e6 * (k - 1)) AS BIGINT)
-           AS f_e6,
-       CAST(ssb_e6 * 1000000 // (ssb_e6 + ssw_e6) AS BIGINT) AS eta2_e6
-FROM f
-"""
-
-
-@register("q_events_anova_f", _ANOVA_SQL)
-def q_events_anova_f(spark, sf_dir):
-    """One-way ANOVA F statistic across event types on the e2-scaled
-    value, in exact integer arithmetic: per-group (n_g, Σy, Σy²), the
-    between-group sum A = Σ_g (Σy)²·10⁶ div n_g floored ONCE per group
-    (deterministic, identical expression both engines), then
-    SSB_e6 = A − S²·10⁶ div N and SSW_e6 = Σy²·10⁶ − A — the floats of
-    textbook mean-square formulas never form. F = (SSB/(k−1))/(SSW/(N−k))
-    and η² = SSB/SST land as cross-multiplied e6 quotients. Exact while
-    the F numerator Σy²·N·10¹² < 10³⁸, i.e. N ≲ 10⁹ at e2 values ~10⁴ —
-    beyond that drop the shared 10⁶ from SSB/SSW before the F quotient.
-    Plan: a single map-side-combinable groupBy to k rows, then one k-row
-    reduction — the scan is the whole cost at any scale."""
-    e = _t(spark, sf_dir, "events")
-    y = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("decimal(38,0)")
-    g = e.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("ng"),
-        F.sum(y).alias("sg"), F.sum(y * y).alias("qg"))
-    a = g.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("k"),
-              F.sum("ng").alias("n"), F.sum("sg").alias("s"),
-              F.sum("qg").alias("q"),
-              F.sum(F.expr(
-                  "CAST(sg * sg * 1000000 div ng AS DECIMAL(38,0))"))
-              .alias("abetween"))
-    # Spark's integral `div` yields LONG; re-widen every quotient to
-    # decimal(38,0) so the cross-multiplied F numerator can't overflow.
-    f = a.select("k", "n",
-                 F.expr("abetween - CAST(s * s * 1000000 div n"
-                        " AS DECIMAL(38,0))").alias("ssb_e6"),
-                 F.expr("q * 1000000 - abetween").alias("ssw_e6"))
-    return f.select(
-        F.col("k").cast("long").alias("n_groups"),
-        F.col("n").cast("long").alias("n_rows"),
-        F.col("ssb_e6").cast("long").alias("ssb_e6"),
-        F.col("ssw_e6").cast("long").alias("ssw_e6"),
-        F.expr("CAST(ssb_e6 * (n - k) * 1000000 div (ssw_e6 * (k - 1))"
-               " AS BIGINT)").alias("f_e6"),
-        F.expr("CAST(ssb_e6 * 1000000 div (ssb_e6 + ssw_e6) AS BIGINT)")
-        .alias("eta2_e6"))
-
-
-_KENDALL_SQL = """
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS HUGEINT) AS x,
-         CAST(count(DISTINCT user_id) AS HUGEINT) AS y
-  FROM events GROUP BY 1
-), p AS (
-  SELECT CAST(count(*) AS HUGEINT) AS npairs,
-         CAST(count(*) FILTER (WHERE (a.x - b.x) * (a.y - b.y) > 0)
-              AS HUGEINT) AS nc,
-         CAST(count(*) FILTER (WHERE (a.x - b.x) * (a.y - b.y) < 0)
-              AS HUGEINT) AS nd,
-         CAST(count(*) FILTER (WHERE a.x = b.x) AS HUGEINT) AS n1,
-         CAST(count(*) FILTER (WHERE a.y = b.y) AS HUGEINT) AS n2
-  FROM d a JOIN d b ON a.day < b.day
-)
-SELECT CAST(npairs AS BIGINT) AS n_pairs, CAST(nc AS BIGINT) AS concordant,
-       CAST(nd AS BIGINT) AS discordant,
-       CAST(n1 AS BIGINT) AS ties_x, CAST(n2 AS BIGINT) AS ties_y,
-       CAST(CASE WHEN nc >= nd THEN 1 ELSE -1 END
-            * (nc - nd) * (nc - nd) * 1000000
-            // ((npairs - n1) * (npairs - n2)) AS BIGINT)
-           AS tau_b2_signed_e6
-FROM p
-"""
-
-
-@register("q_events_kendall_tau", _KENDALL_SQL)
-def q_events_kendall_tau(spark, sf_dir):
-    """Kendall rank correlation (tau-b, tie-corrected) between the daily
-    event count and daily active users, exactly: concordant/discordant/
-    tied pair counts from the day×day upper-triangle join, with the
-    square of tau-b carried as the exact signed rational
-    sign·(nc−nd)²·10⁶ div ((n₀−n₁)(n₀−n₂)) so the sqrt in the textbook
-    form never produces a float (the Cramér's-V² / Spearman precedent).
-    Plan: the O(n²) pair join runs over the DAY-aggregated series —
-    bounded by calendar length, never row count — so 10¹² raw rows still
-    reduce to ~10³ days before the join; the aggregate itself is one
-    map-side-combinable groupBy."""
-    e = _t(spark, sf_dir, "events")
-    d = (e.groupBy(F.col("ts").cast("date").alias("day"))
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("x"),
-              F.countDistinct("user_id").cast("decimal(38,0)").alias("y")))
-    a = d.select(F.col("day").alias("da"), F.col("x").alias("xa"),
-                 F.col("y").alias("ya"))
-    b = d.select(F.col("day").alias("db"), F.col("x").alias("xb"),
-                 F.col("y").alias("yb"))
-    p = (a.join(F.broadcast(b), F.col("da") < F.col("db"))
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("npairs"),
-              F.sum(F.when((F.col("xa") - F.col("xb"))
-                           * (F.col("ya") - F.col("yb")) > 0, 1)
-                    .otherwise(0)).cast("decimal(38,0)").alias("nc"),
-              F.sum(F.when((F.col("xa") - F.col("xb"))
-                           * (F.col("ya") - F.col("yb")) < 0, 1)
-                    .otherwise(0)).cast("decimal(38,0)").alias("nd"),
-              F.sum(F.when(F.col("xa") == F.col("xb"), 1).otherwise(0))
-              .cast("decimal(38,0)").alias("n1"),
-              F.sum(F.when(F.col("ya") == F.col("yb"), 1).otherwise(0))
-              .cast("decimal(38,0)").alias("n2")))
-    return p.select(
-        F.col("npairs").cast("long").alias("n_pairs"),
-        F.col("nc").cast("long").alias("concordant"),
-        F.col("nd").cast("long").alias("discordant"),
-        F.col("n1").cast("long").alias("ties_x"),
-        F.col("n2").cast("long").alias("ties_y"),
-        F.expr("CAST((CASE WHEN nc >= nd THEN 1 ELSE -1 END)"
-               " * (nc - nd) * (nc - nd) * 1000000"
-               " div ((npairs - n1) * (npairs - n2)) AS BIGINT)")
-        .alias("tau_b2_signed_e6"))
-
-
-_MCNEMAR_SQL = """
-WITH u AS (
-  SELECT user_id,
-         max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS r1,
-         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS r2
-  FROM events GROUP BY 1
-), c AS (
-  SELECT CAST(count(*) FILTER (WHERE r1 = 1 AND r2 = 1) AS HUGEINT) AS a,
-         CAST(count(*) FILTER (WHERE r1 = 1 AND r2 = 0) AS HUGEINT) AS b,
-         CAST(count(*) FILTER (WHERE r1 = 0 AND r2 = 1) AS HUGEINT) AS c,
-         CAST(count(*) FILTER (WHERE r1 = 0 AND r2 = 0) AS HUGEINT) AS d
-  FROM u
-)
-SELECT CAST(a AS BIGINT) AS both_yes, CAST(b AS BIGINT) AS click_only,
-       CAST(c AS BIGINT) AS purchase_only, CAST(d AS BIGINT) AS neither,
-       CAST(CASE WHEN b + c = 0 THEN 0
-            ELSE greatest(abs(b - c) - 1, 0) * greatest(abs(b - c) - 1, 0)
-                 * 1000000 // (b + c) END AS BIGINT) AS chi2_cc_e6,
-       CAST(CASE WHEN c = 0 THEN -1 ELSE b * 1000000 // c END AS BIGINT)
-           AS odds_e6
-FROM c
-"""
-
-
-@register("q_events_mcnemar", _MCNEMAR_SQL)
-def q_events_mcnemar(spark, sf_dir):
-    """McNemar's test for paired binary outcomes: per user, did-they-click
-    vs did-they-purchase, over the same user panel (the natural paired
-    design — each user is their own control). Only the discordant cells
-    drive the statistic; the Edwards continuity-corrected
-    chi² = (|b−c|−1)²/(b+c) lands as an exact e6 integer quotient
-    (greatest(·,0) keeps the b=c case at 0, identically in both engines),
-    and the discordant odds b/c as an e6 quotient with −1 sentinel when
-    c=0. Plan: one map-side-combinable groupBy(user_id) of two boolean
-    maxes, then a single 4-cell reduction — no shuffle beyond the user
-    aggregate at any scale."""
-    e = _t(spark, sf_dir, "events")
-    u = e.groupBy("user_id").agg(
-        F.max(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .alias("r1"),
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .alias("r2"))
-    dec = "decimal(38,0)"
-    c = u.agg(
-        F.sum(F.when((F.col("r1") == 1) & (F.col("r2") == 1), 1)
-              .otherwise(0)).cast(dec).alias("a"),
-        F.sum(F.when((F.col("r1") == 1) & (F.col("r2") == 0), 1)
-              .otherwise(0)).cast(dec).alias("b"),
-        F.sum(F.when((F.col("r1") == 0) & (F.col("r2") == 1), 1)
-              .otherwise(0)).cast(dec).alias("c"),
-        F.sum(F.when((F.col("r1") == 0) & (F.col("r2") == 0), 1)
-              .otherwise(0)).cast(dec).alias("d"))
-    return c.select(
-        F.col("a").cast("long").alias("both_yes"),
-        F.col("b").cast("long").alias("click_only"),
-        F.col("c").cast("long").alias("purchase_only"),
-        F.col("d").cast("long").alias("neither"),
-        F.expr("CAST(CASE WHEN b + c = 0 THEN 0"
-               " ELSE greatest(abs(b - c) - 1, 0)"
-               " * greatest(abs(b - c) - 1, 0)"
-               " * 1000000 div (b + c) END AS BIGINT)").alias("chi2_cc_e6"),
-        F.expr("CAST(CASE WHEN c = 0 THEN -1"
-               " ELSE b * 1000000 div c END AS BIGINT)").alias("odds_e6"))
-
-
-_KAPPA_SQL = """
-WITH r AS (
-  SELECT CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS r1,
-         CASE WHEN strpos(text, 'spark') > 0 THEN 1 ELSE 0 END AS r2
-  FROM documents
-), c AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n,
-         CAST(count(*) FILTER (WHERE r1 = 1 AND r2 = 1) AS HUGEINT) AS n11,
-         CAST(count(*) FILTER (WHERE r1 = 1 AND r2 = 0) AS HUGEINT) AS n10,
-         CAST(count(*) FILTER (WHERE r1 = 0 AND r2 = 1) AS HUGEINT) AS n01,
-         CAST(count(*) FILTER (WHERE r1 = 0 AND r2 = 0) AS HUGEINT) AS n00
-  FROM r
-), k AS (
-  SELECT n, n11, n10, n01, n00,
-         (n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00) AS pe_num
-  FROM c
-)
-SELECT CAST(n AS BIGINT) AS n_docs, CAST(n11 AS BIGINT) AS n11,
-       CAST(n10 AS BIGINT) AS n10, CAST(n01 AS BIGINT) AS n01,
-       CAST(n00 AS BIGINT) AS n00,
-       CAST((n * (n11 + n00) + n - 1) * 1000000 // n // n AS BIGINT)
-           AS po_e6_biased,
-       CAST((n * (n11 + n00) - pe_num) * 1000000
-            // (n * n - pe_num) AS BIGINT) AS kappa_e6
-FROM k
-"""
-
-
-@register("q_docs_cohen_kappa", _KAPPA_SQL)
-def q_docs_cohen_kappa(spark, sf_dir):
-    """Cohen's kappa inter-rater agreement between two deterministic
-    document-quality raters: rater 1 flags long documents (n_chars ≥ 300,
-    the corpus median), rater 2 flags topical ones (substring 'spark'
-    present) — correlated through length but far from identical. Kappa's
-    float form (p_o−p_e)/(1−p_e) collapses to the exact integer quotient
-    (N·(n11+n00) − pe_num) / (N² − pe_num) after multiplying through by
-    N² — no float ever forms. po is reported ceiling-biased ((x+N−1)//N
-    before the second div) purely to keep it integral and identical.
-    Plan: one narrow scan projecting two CASE flags, one 5-cell
-    reduction — map-side combinable, no shuffle of data-sized rows."""
-    d = _t(spark, sf_dir, "documents")
-    r1 = F.when(F.col("n_chars") >= 300, 1).otherwise(0)
-    r2 = F.when(F.instr("text", "spark") > 0, 1).otherwise(0)
-    dec = "decimal(38,0)"
-    c = d.select(r1.alias("r1"), r2.alias("r2")).agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum(F.when((F.col("r1") == 1) & (F.col("r2") == 1), 1)
-              .otherwise(0)).cast(dec).alias("n11"),
-        F.sum(F.when((F.col("r1") == 1) & (F.col("r2") == 0), 1)
-              .otherwise(0)).cast(dec).alias("n10"),
-        F.sum(F.when((F.col("r1") == 0) & (F.col("r2") == 1), 1)
-              .otherwise(0)).cast(dec).alias("n01"),
-        F.sum(F.when((F.col("r1") == 0) & (F.col("r2") == 0), 1)
-              .otherwise(0)).cast(dec).alias("n00"))
-    k = c.withColumn(
-        "pe_num",
-        F.expr("(n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00)")
-        .cast(dec))
-    return k.select(
-        F.col("n").cast("long").alias("n_docs"),
-        F.col("n11").cast("long").alias("n11"),
-        F.col("n10").cast("long").alias("n10"),
-        F.col("n01").cast("long").alias("n01"),
-        F.col("n00").cast("long").alias("n00"),
-        F.expr("CAST((n * (n11 + n00) + n - 1) * 1000000 div n div n"
-               " AS BIGINT)").alias("po_e6_biased"),
-        F.expr("CAST((n * (n11 + n00) - pe_num) * 1000000"
-               " div (n * n - pe_num) AS BIGINT)").alias("kappa_e6"))
-
-
-_LOGRANK_SQL = """
-WITH e AS (
-  SELECT user_id, user_id % 2 AS grp,
-         epoch_us(CAST(ts AS TIMESTAMP)) AS us
-  FROM events
-), g AS (
-  SELECT user_id, grp, us,
-         CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us) IS NULL
-                   OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us)
-                      > 1800000000
-              THEN 1 ELSE 0 END AS brk
-  FROM e
-), s AS (
-  SELECT user_id, grp, us,
-         sum(brk) OVER (PARTITION BY user_id ORDER BY us) AS sid
-  FROM g
-), sess AS (
-  SELECT user_id, grp, sid, min(us) AS t0, max(us) AS t1
-  FROM s GROUP BY 1, 2, 3
-), b AS (SELECT max(us) AS mx FROM e),
-dur AS (
-  SELECT grp, (t1 - t0) // 60000000 AS t,
-         (t1 > (SELECT mx FROM b) - 1800000000) AS censored
-  FROM sess
-), ev AS (
-  SELECT t,
-         CAST(count(*) FILTER (WHERE grp = 0) AS HUGEINT) AS a1,
-         CAST(count(*) FILTER (WHERE grp = 1) AS HUGEINT) AS a2,
-         CAST(count(*) FILTER (WHERE grp = 0 AND NOT censored)
-              AS HUGEINT) AS d1,
-         CAST(count(*) FILTER (WHERE grp = 1 AND NOT censored)
-              AS HUGEINT) AS d2
-  FROM dur GROUP BY t
-), risk AS (
-  SELECT t, d1, d2,
-         sum(a1) OVER (ORDER BY t DESC) AS n1,
-         sum(a2) OVER (ORDER BY t DESC) AS n2
-  FROM ev
-), terms AS (
-  SELECT d1, d2, n1, n2, d1 + d2 AS dt, n1 + n2 AS nt
-  FROM risk WHERE d1 + d2 > 0
-), agg AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n_times, sum(d1) AS o1, sum(d2) AS o2,
-         sum(dt * n1 * 1000000000 // nt) AS e1_e9,
-         sum(CASE WHEN nt > 1
-             THEN dt * (nt - dt) * n1 * n2 * 1000000000
-                  // (nt * nt * (nt - 1)) ELSE 0 END) AS v_e9
-  FROM terms
-)
-SELECT CAST(n_times AS BIGINT) AS n_times, CAST(o1 AS BIGINT) AS o1,
-       CAST(o2 AS BIGINT) AS o2, CAST(e1_e9 AS BIGINT) AS e1_e9,
-       CAST(v_e9 AS BIGINT) AS v_e9,
-       CAST(CASE WHEN v_e9 = 0 THEN 0
-            ELSE (o1 * 1000000000 - e1_e9) * (o1 * 1000000000 - e1_e9)
-                 // (v_e9 * 1000) END AS BIGINT) AS chi2_e9
-FROM agg
-"""
-
-
-@register("q_events_logrank", _LOGRANK_SQL)
-def q_events_logrank(spark, sf_dir):
-    """Two-group log-rank test on session survival: the q_events_survival
-    sessionization (30-min gap, right-censoring within 30 min of corpus
-    end) split into even/odd user_id cohorts, compared by the Mantel
-    discipline — at each distinct death time, observed group-1 deaths vs
-    the hypergeometric expectation d_t·n1_t/n_t and variance
-    d_t(n_t−d_t)n1_t·n2_t / (n_t²(n_t−1)). Each per-time term is floored
-    ONCE to e9 (identical expression both engines) then exactly integer-
-    summed, so float accumulation order can't drift; the final
-    chi² = (O1−E1)²/V emerges as an e9 integer quotient. Plan: one
-    user-partitioned sessionize window, then the series collapses to
-    distinct duration-minutes before the two unpartitioned cumulative
-    windows — O(calendar) rows, never O(sessions), past the groupBy."""
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", (F.col("user_id") % 2).alias("grp"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"))
-    w = Window.partitionBy("user_id").orderBy("us")
-    gap = F.col("us") - F.lag("us").over(w)
-    s = (e.withColumn("brk", F.when(F.lag("us").over(w).isNull()
-                                    | (gap > 1_800_000_000), 1).otherwise(0))
-         .withColumn("sid", F.sum("brk").over(w)))
-    sess = (s.groupBy("user_id", "grp", "sid")
-            .agg(F.min("us").alias("t0"), F.max("us").alias("t1")))
-    b = e.agg(F.max("us").alias("mx"))
-    dur = (sess.crossJoin(F.broadcast(b))
-           .select("grp", F.expr("(t1 - t0) div 60000000").alias("t"),
-                   (F.col("t1") > F.col("mx") - 1_800_000_000)
-                   .alias("censored")))
-    dec = "decimal(38,0)"
-    ev = dur.groupBy("t").agg(
-        F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).cast(dec)
-        .alias("a1"),
-        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).cast(dec)
-        .alias("a2"),
-        F.sum(F.when((F.col("grp") == 0) & ~F.col("censored"), 1)
-              .otherwise(0)).cast(dec).alias("d1"),
-        F.sum(F.when((F.col("grp") == 1) & ~F.col("censored"), 1)
-              .otherwise(0)).cast(dec).alias("d2"))
-    wd = Window.orderBy(F.col("t").desc())
-    risk = ev.select("t", "d1", "d2",
-                     F.sum("a1").over(wd).alias("n1"),
-                     F.sum("a2").over(wd).alias("n2"))
-    terms = (risk.filter(F.col("d1") + F.col("d2") > 0)
-             .select("d1", "d2", "n1", "n2",
-                     (F.col("d1") + F.col("d2")).alias("dt"),
-                     (F.col("n1") + F.col("n2")).alias("nt")))
-    agg = terms.agg(
-        F.count(F.lit(1)).cast(dec).alias("n_times"),
-        F.sum("d1").alias("o1"), F.sum("d2").alias("o2"),
-        F.sum(F.expr("CAST(dt * n1 * 1000000000 div nt AS DECIMAL(38,0))"))
-        .alias("e1_e9"),
-        F.sum(F.expr(
-            "CASE WHEN nt > 1 THEN CAST(dt * (nt - dt) * n1 * n2"
-            " * 1000000000 div (nt * nt * (nt - 1)) AS DECIMAL(38,0))"
-            " ELSE CAST(0 AS DECIMAL(38,0)) END")).alias("v_e9"))
-    return agg.select(
-        F.col("n_times").cast("long").alias("n_times"),
-        F.col("o1").cast("long").alias("o1"),
-        F.col("o2").cast("long").alias("o2"),
-        F.col("e1_e9").cast("long").alias("e1_e9"),
-        F.col("v_e9").cast("long").alias("v_e9"),
-        F.expr("CAST(CASE WHEN v_e9 = 0 THEN 0"
-               " ELSE (o1 * 1000000000 - e1_e9) * (o1 * 1000000000 - e1_e9)"
-               " div (v_e9 * 1000) END AS BIGINT)").alias("chi2_e9"))
-
-
-_COCHRAN_Q_SQL = """
-WITH u AS (
-  SELECT user_id,
-         max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS x1,
-         max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS x2,
-         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS x3
-  FROM events GROUP BY 1
-), c AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n_users,
-         CAST(sum(x1) AS HUGEINT) AS g1, CAST(sum(x2) AS HUGEINT) AS g2,
-         CAST(sum(x3) AS HUGEINT) AS g3,
-         CAST(sum((x1 + x2 + x3) * (x1 + x2 + x3)) AS HUGEINT) AS sum_l2
-  FROM u
-), q AS (
-  SELECT n_users, g1, g2, g3, g1 + g2 + g3 AS t_total, sum_l2 FROM c
-)
-SELECT CAST(n_users AS BIGINT) AS n_users, CAST(g1 AS BIGINT) AS g_view,
-       CAST(g2 AS BIGINT) AS g_click, CAST(g3 AS BIGINT) AS g_purchase,
-       CAST(t_total AS BIGINT) AS t_total, CAST(sum_l2 AS BIGINT) AS sum_l2,
-       CAST(CASE WHEN 3 * t_total - sum_l2 = 0 THEN 0
-            ELSE 2 * (3 * (g1 * g1 + g2 * g2 + g3 * g3) - t_total * t_total)
-                 * 1000000 // (3 * t_total - sum_l2) END AS BIGINT) AS q_e6
-FROM q
-"""
-
-
-@register("q_events_cochran_q", _COCHRAN_Q_SQL)
-def q_events_cochran_q(spark, sf_dir):
-    """Cochran's Q test — the k-treatment generalization of McNemar — on
-    three paired binary outcomes per user: did-they-view / did-they-click
-    / did-they-purchase at least once, over the same user panel. The
-    textbook Q = k(k−1)·Σ_j(G_j − T/k)² / (kT − ΣL_i²) is cleared of its
-    inner fractions to the exact integer identity
-    Q = (k−1)·(k·ΣG_j² − T²) / (kT − ΣL_i²) with k=3, so no float ever
-    forms; it lands as an e6 integer quotient (0 when every user got all
-    or none of the treatments, where Q is undefined). Plan: one
-    map-side-combinable groupBy(user_id) of three boolean maxes, then a
-    single 5-cell reduction — nothing beyond the user aggregate shuffles
-    at any scale."""
-    e = _t(spark, sf_dir, "events")
-    u = e.groupBy("user_id").agg(
-        F.max(F.when(F.col("event_type") == "view", 1).otherwise(0))
-        .alias("x1"),
-        F.max(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .alias("x2"),
-        F.max(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .alias("x3"))
-    dec = "decimal(38,0)"
-    c = u.agg(
-        F.count(F.lit(1)).cast(dec).alias("n_users"),
-        F.sum("x1").cast(dec).alias("g1"),
-        F.sum("x2").cast(dec).alias("g2"),
-        F.sum("x3").cast(dec).alias("g3"),
-        F.sum((F.col("x1") + F.col("x2") + F.col("x3"))
-              * (F.col("x1") + F.col("x2") + F.col("x3"))).cast(dec)
-        .alias("sum_l2"))
-    q = c.withColumn("t_total",
-                     (F.col("g1") + F.col("g2") + F.col("g3")).cast(dec))
-    return q.select(
-        F.col("n_users").cast("long").alias("n_users"),
-        F.col("g1").cast("long").alias("g_view"),
-        F.col("g2").cast("long").alias("g_click"),
-        F.col("g3").cast("long").alias("g_purchase"),
-        F.col("t_total").cast("long").alias("t_total"),
-        F.col("sum_l2").cast("long").alias("sum_l2"),
-        F.expr("CAST(CASE WHEN 3 * t_total - sum_l2 = 0 THEN 0"
-               " ELSE 2 * (3 * (g1 * g1 + g2 * g2 + g3 * g3)"
-               " - t_total * t_total) * 1000000"
-               " div (3 * t_total - sum_l2) END AS BIGINT)").alias("q_e6"))
-
-
-_BROWN_FORSYTHE_SQL = """
-WITH y AS (
-  SELECT event_type, CAST(floor("value" * 100 + 0.5) AS HUGEINT) AS y
-  FROM events
-), v AS (
-  SELECT event_type, y, CAST(count(*) AS HUGEINT) AS c
-  FROM y GROUP BY 1, 2
-), cum AS (
-  SELECT event_type, y, c,
-         sum(c) OVER (PARTITION BY event_type ORDER BY y) AS cum,
-         sum(c) OVER (PARTITION BY event_type) AS n
-  FROM v
-), med AS (
-  SELECT event_type, min(y) AS med
-  FROM cum WHERE 2 * cum >= n GROUP BY 1
-), z AS (
-  SELECT y.event_type, abs(y.y - m.med) AS z
-  FROM y JOIN med m ON y.event_type = m.event_type
-), g AS (
-  SELECT event_type, CAST(count(*) AS HUGEINT) AS ng,
-         sum(z) AS sg, sum(z * z) AS qg
-  FROM z GROUP BY 1
-), a AS (
-  SELECT CAST(count(*) AS HUGEINT) AS k, sum(ng) AS n, sum(sg) AS s,
-         sum(qg) AS q, sum(sg * sg * 1000000 // ng) AS abetween
-  FROM g
-), f AS (
-  SELECT k, n, abetween - s * s * 1000000 // n AS ssb_e6,
-         q * 1000000 - abetween AS ssw_e6
-  FROM a
-)
-SELECT CAST(k AS BIGINT) AS n_groups, CAST(n AS BIGINT) AS n_rows,
-       CAST(ssb_e6 AS BIGINT) AS ssb_e6, CAST(ssw_e6 AS BIGINT) AS ssw_e6,
-       CAST(ssb_e6 * (n - k) * 1000000 // (ssw_e6 * (k - 1)) AS BIGINT)
-           AS f_e6
-FROM f
-"""
-
-
-@register("q_events_brown_forsythe", _BROWN_FORSYTHE_SQL)
-def q_events_brown_forsythe(spark, sf_dir):
-    """Brown-Forsythe test for homogeneity of variances across event
-    types (Levene's test with the median center — robust to the skewed
-    value distribution): per-group LOWER median of the e2-scaled value
-    (smallest y with 2·cumcount ≥ n, identical discrete rule both
-    engines — interpolating medians would put a .5 in play), then the
-    one-way ANOVA F of the absolute deviations z = |y − med_g| computed
-    with the exact integer power-sum discipline of q_events_anova_f
-    (per-group Σz and Σz² floored ONCE into e6 between/within sums, F as
-    a cross-multiplied e6 quotient). Plan: the median pass groups by
-    DISTINCT (event_type, value) before its cumulative window — window
-    input is value cardinality per group, never row count — and the
-    5-row median table broadcasts back onto the scan; both heavy passes
-    are map-side-combinable groupBys."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    y = e.select("event_type",
-                 F.floor(F.col("value") * 100 + F.lit(0.5)).cast(dec)
-                 .alias("y"))
-    v = y.groupBy("event_type", "y").agg(
-        F.count(F.lit(1)).cast(dec).alias("c"))
-    wg = Window.partitionBy("event_type")
-    cum = (v.withColumn("cum", F.sum("c").over(wg.orderBy("y")))
-           .withColumn("n", F.sum("c").over(wg)))
-    med = (cum.filter(2 * F.col("cum") >= F.col("n"))
-           .groupBy("event_type").agg(F.min("y").alias("med")))
-    z = (y.join(F.broadcast(med), "event_type")
-         .select("event_type", F.abs(F.col("y") - F.col("med")).alias("z")))
-    g = z.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast(dec).alias("ng"),
-        F.sum("z").alias("sg"), F.sum(F.col("z") * F.col("z")).alias("qg"))
-    a = g.agg(F.count(F.lit(1)).cast(dec).alias("k"),
-              F.sum("ng").alias("n"), F.sum("sg").alias("s"),
-              F.sum("qg").alias("q"),
-              F.sum(F.expr(
-                  "CAST(sg * sg * 1000000 div ng AS DECIMAL(38,0))"))
-              .alias("abetween"))
-    f = a.select("k", "n",
-                 F.expr("abetween - CAST(s * s * 1000000 div n"
-                        " AS DECIMAL(38,0))").alias("ssb_e6"),
-                 F.expr("q * 1000000 - abetween").alias("ssw_e6"))
-    return f.select(
-        F.col("k").cast("long").alias("n_groups"),
-        F.col("n").cast("long").alias("n_rows"),
-        F.col("ssb_e6").cast("long").alias("ssb_e6"),
-        F.col("ssw_e6").cast("long").alias("ssw_e6"),
-        F.expr("CAST(ssb_e6 * (n - k) * 1000000 div (ssw_e6 * (k - 1))"
-               " AS BIGINT)").alias("f_e6"))
-
-
-_DURBIN_WATSON_SQL = """
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CAST(sum(CAST(floor("value" * 100 + 0.5) AS HUGEINT)) AS HUGEINT)
-             AS y
-  FROM events GROUP BY 1
-), t AS (
-  SELECT y, CAST(row_number() OVER (ORDER BY day) AS HUGEINT) AS t FROM d
-), s AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(t) AS st, sum(t * t) AS stt,
-         sum(y) AS sy, sum(t * y) AS sty
-  FROM t
-), co AS (
-  SELECT n, n * stt - st * st AS dd, n * sty - st * sy AS bn, st, sy FROM s
-), r AS (
-  SELECT t.t,
-         (SELECT n FROM co) * (SELECT dd FROM co) * t.y
-         - ((SELECT dd FROM co) * (SELECT sy FROM co)
-            - (SELECT bn FROM co) * (SELECT st FROM co))
-         - (SELECT n FROM co) * (SELECT bn FROM co) * t.t AS e
-  FROM t
-), dw AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n_days,
-         sum(e * e) AS sse,
-         sum(CASE WHEN lag_e IS NULL THEN 0
-                  ELSE (e - lag_e) * (e - lag_e) END) AS ssd
-  FROM (SELECT e, lag(e) OVER (ORDER BY t) AS lag_e FROM r)
-)
-SELECT CAST(n_days AS BIGINT) AS n_days,
-       CAST(CASE WHEN sse = 0 THEN 0
-            ELSE ssd * 1000000 // sse END AS BIGINT) AS dw_e6,
-       CAST(CASE WHEN sse = 0 THEN 0
-            ELSE (2 * sse - ssd) * 1000000 // (2 * sse) END AS BIGINT)
-           AS rho1_e6
-FROM dw
-"""
-
-
-@register("q_events_durbin_watson", _DURBIN_WATSON_SQL)
-def q_events_durbin_watson(spark, sf_dir):
-    """Durbin-Watson test for first-order autocorrelation in the
-    residuals of the daily-revenue linear trend: the day-aggregated
-    e2-scaled value series is OLS-fit exactly by clearing the normal
-    equations' denominators — slope numerator Bn = nΣty−ΣtΣy over
-    D = nΣt²−(Σt)², so the scaled residual
-    E_t = nD·y_t − (D·Σy − Bn·Σt) − n·Bn·t is an exact integer whose
-    common factor cancels in DW = Σ(E_t−E_{t−1})² / ΣE_t², reported as
-    an e6 quotient alongside the equivalent lag-1 coefficient
-    ρ₁ ≈ 1 − DW/2 (same exact integers). Magnitudes stay < 10³⁸ while
-    n_days·(nD·y)² fits decimal(38,0) — with daily e2 revenue ≤ 10¹² and
-    a month of days that is ~10³⁴. Plan: one map-side-combinable daily
-    groupBy, then every window and join runs on O(calendar) rows — the
-    five OLS sums broadcast back as a 1-row cross join, never a
-    data-sized shuffle."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d = (e.groupBy(F.col("ts").cast("date").alias("day"))
-         .agg(F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)))
-              .cast(dec).alias("y")))
-    t = d.select(
-        "y", F.row_number().over(Window.orderBy("day")).cast(dec).alias("t"))
-    s = t.agg(F.count(F.lit(1)).cast(dec).alias("n"),
-              F.sum("t").alias("st"),
-              F.sum(F.col("t") * F.col("t")).alias("stt"),
-              F.sum("y").alias("sy"),
-              F.sum(F.col("t") * F.col("y")).alias("sty"))
-    co = s.select("n", "st", "sy",
-                  F.expr("n * stt - st * st").alias("dd"),
-                  F.expr("n * sty - st * sy").alias("bn"))
-    r = (t.crossJoin(F.broadcast(co))
-         .select("t", F.expr("n * dd * y - (dd * sy - bn * st)"
-                             " - n * bn * t").alias("e")))
-    lag_e = F.lag("e").over(Window.orderBy("t"))
-    dw = (r.withColumn("lag_e", lag_e)
-          .agg(F.count(F.lit(1)).cast(dec).alias("n_days"),
-               F.sum(F.col("e") * F.col("e")).alias("sse"),
-               F.sum(F.when(F.col("lag_e").isNull(),
-                            F.lit(0).cast(dec))
-                     .otherwise((F.col("e") - F.col("lag_e"))
-                                * (F.col("e") - F.col("lag_e"))))
-               .alias("ssd")))
-    return dw.select(
-        F.col("n_days").cast("long").alias("n_days"),
-        F.expr("CAST(CASE WHEN sse = 0 THEN 0"
-               " ELSE ssd * 1000000 div sse END AS BIGINT)").alias("dw_e6"),
-        F.expr("CAST(CASE WHEN sse = 0 THEN 0"
-               " ELSE (2 * sse - ssd) * 1000000 div (2 * sse) END"
-               " AS BIGINT)").alias("rho1_e6"))
-
-
-_COCHRAN_ARMITAGE_SQL = """
-WITH b AS (
-  SELECT CAST(hour(ts) // 6 AS HUGEINT) AS w,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS d
-  FROM events
-), g AS (
-  SELECT w, CAST(count(*) AS HUGEINT) AS n_i, CAST(sum(d) AS HUGEINT) AS d_i
-  FROM b GROUP BY 1
-), a AS (
-  SELECT sum(n_i) AS n, sum(d_i) AS d, sum(w * d_i) AS swd,
-         sum(w * n_i) AS swn, sum(w * w * n_i) AS swwn
-  FROM g
-)
-SELECT CAST(n AS BIGINT) AS n_events, CAST(d AS BIGINT) AS n_purchases,
-       CAST(swd AS BIGINT) AS sum_wd, CAST(swn AS BIGINT) AS sum_wn,
-       CAST(swwn AS BIGINT) AS sum_wwn,
-       CAST(CASE WHEN d = 0 OR d = n OR n * swwn = swn * swn THEN 0
-            ELSE n * (n * swd - d * swn) * (n * swd - d * swn) * 1000000
-                 // (d * (n - d) * (n * swwn - swn * swn)) END AS BIGINT)
-           AS chi2_e6
-FROM a
-"""
-
-
-@register("q_events_cochran_armitage", _COCHRAN_ARMITAGE_SQL)
-def q_events_cochran_armitage(spark, sf_dir):
-    """Cochran-Armitage test for a linear trend in purchase proportion
-    across the four ordered day-part buckets (hour div 6, scores
-    w = 0..3): is conversion monotonically drifting across the day? The
-    statistic is the fraction-cleared exact integer form
-    χ² = N·(N·Σw·d − D·Σw·n)² / (D(N−D)(N·Σw²n − (Σwn)²)) — every term a
-    plain sum over the 4-row group table, the quotient floored once to
-    e6 identically in both engines (0 when degenerate: no purchases, all
-    purchases, or a single occupied bucket). Plan: one map-side-
-    combinable groupBy to 4 rows, then a 5-cell reduction — the scan is
-    the entire cost at any scale."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    b = e.select(
-        F.expr("CAST(hour(ts) div 6 AS DECIMAL(38,0))").alias("w"),
-        F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("d"))
-    g = b.groupBy("w").agg(F.count(F.lit(1)).cast(dec).alias("n_i"),
-                           F.sum("d").cast(dec).alias("d_i"))
-    a = g.agg(F.sum("n_i").alias("n"), F.sum("d_i").alias("d"),
-              F.sum(F.col("w") * F.col("d_i")).alias("swd"),
-              F.sum(F.col("w") * F.col("n_i")).alias("swn"),
-              F.sum(F.col("w") * F.col("w") * F.col("n_i")).alias("swwn"))
-    return a.select(
-        F.col("n").cast("long").alias("n_events"),
-        F.col("d").cast("long").alias("n_purchases"),
-        F.col("swd").cast("long").alias("sum_wd"),
-        F.col("swn").cast("long").alias("sum_wn"),
-        F.col("swwn").cast("long").alias("sum_wwn"),
-        F.expr("CAST(CASE WHEN d = 0 OR d = n OR n * swwn = swn * swn"
-               " THEN 0 ELSE n * (n * swd - d * swn) * (n * swd - d * swn)"
-               " * 1000000 div (d * (n - d) * (n * swwn - swn * swn)) END"
-               " AS BIGINT)").alias("chi2_e6"))
-
-
-_HAAR_SQL = """
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CAST(sum(CAST(floor("value" * 100 + 0.5) AS HUGEINT)) AS HUGEINT)
-             AS y
-  FROM events GROUP BY 1
-), l0 AS (
-  SELECT CAST(row_number() OVER (ORDER BY day) - 1 AS HUGEINT) AS i, y AS a
-  FROM d QUALIFY row_number() OVER (ORDER BY day) <= 16
-), l1 AS (
-  SELECT i // 2 AS i, sum(a) AS a,
-         sum(CASE WHEN i % 2 = 0 THEN a ELSE -a END) AS det
-  FROM l0 GROUP BY 1
-), l2 AS (
-  SELECT i // 2 AS i, sum(a) AS a,
-         sum(CASE WHEN i % 2 = 0 THEN a ELSE -a END) AS det
-  FROM l1 GROUP BY 1
-), l3 AS (
-  SELECT i // 2 AS i, sum(a) AS a,
-         sum(CASE WHEN i % 2 = 0 THEN a ELSE -a END) AS det
-  FROM l2 GROUP BY 1
-), l4 AS (
-  SELECT i // 2 AS i, sum(a) AS a,
-         sum(CASE WHEN i % 2 = 0 THEN a ELSE -a END) AS det
-  FROM l3 GROUP BY 1
-)
-SELECT band, CAST(i AS BIGINT) AS idx, CAST(coef AS BIGINT) AS coef
-FROM (
-  SELECT 'd1' AS band, i, det AS coef FROM l1
-  UNION ALL SELECT 'd2', i, det FROM l2
-  UNION ALL SELECT 'd3', i, det FROM l3
-  UNION ALL SELECT 'd4', i, det FROM l4
-  UNION ALL SELECT 'a4', i, a FROM l4
-)
-ORDER BY band, idx
-"""
-
-
-@register("q_events_haar_wavelet", _HAAR_SQL)
-def q_events_haar_wavelet(spark, sf_dir):
-    """Unnormalized Haar wavelet decomposition of the first 16 days of
-    the daily e2-revenue series: four pairwise levels of sums
-    a'_i = a_{2i}+a_{2i+1} and details det_i = a_{2i}−a_{2i+1} (the
-    √2-free integer Haar transform — 16 coefficients: 8+4+2+1 detail
-    bands d1..d4 plus the level-4 approximation a4, from which the
-    series reconstructs exactly). Detail bands localize revenue shocks
-    in both time (idx) and scale (band: d1 = day-pair contrasts, d4 =
-    week-vs-week), all in exact integers — no normalization float ever
-    forms. Plan: one map-side-combinable daily groupBy, then four
-    groupBys over ≤16 rows — everything past the scan is O(1); the
-    window length is a constant, not a data dimension."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d = (e.groupBy(F.col("ts").cast("date").alias("day"))
-         .agg(F.sum(F.floor(F.col("value") * 100 + F.lit(0.5)))
-              .cast(dec).alias("a")))
-    l0 = (d.select(
-            (F.row_number().over(Window.orderBy("day")) - 1).cast(dec)
-            .alias("i"), "a")
-          .filter(F.col("i") < 16))
-    bands = []
-    prev = l0
-    for k in range(1, 5):
-        nxt = (prev.groupBy(F.expr("CAST(i div 2 AS DECIMAL(38,0))")
-                            .alias("i"))
-               .agg(F.sum("a").alias("a"),
-                    F.sum(F.when(F.col("i") % 2 == 0, F.col("a"))
-                          .otherwise(-F.col("a"))).alias("det")))
-        bands.append(nxt.select(F.lit(f"d{k}").alias("band"), "i",
-                                F.col("det").alias("coef")))
-        prev = nxt
-    out = bands[0]
-    for b in bands[1:]:
-        out = out.unionAll(b)
-    out = out.unionAll(prev.select(F.lit("a4").alias("band"), "i",
-                                   F.col("a").alias("coef")))
-    return (out.select("band", F.col("i").cast("long").alias("idx"),
-                       F.col("coef").cast("long").alias("coef"))
-            .orderBy("band", "idx"))
-
-
-_OLS2_SQL = """
-WITH r AS (
-  SELECT CAST(l_quantity AS HUGEINT) AS x1,
-         CAST(floor(l_discount * 100 + 0.5) AS HUGEINT) AS x2,
-         CAST(floor(l_extendedprice) AS HUGEINT) AS y
-  FROM lineitem
-), s AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(x1) AS sx1, sum(x2) AS sx2,
-         sum(y) AS sy, sum(x1 * x1) AS sx11, sum(x2 * x2) AS sx22,
-         sum(x1 * x2) AS sx12, sum(x1 * y) AS sx1y, sum(x2 * y) AS sx2y,
-         sum(y * y) AS syy
-  FROM r
-), c AS (
-  SELECT n, sx1, sx2, sy,
-         n * sx11 - sx1 * sx1 AS s11, n * sx22 - sx2 * sx2 AS s22,
-         n * sx12 - sx1 * sx2 AS s12, n * sx1y - sx1 * sy AS s1y,
-         n * sx2y - sx2 * sy AS s2y, n * syy - sy * sy AS syyc
-  FROM s
-), b AS (
-  SELECT n, sx1, sx2, sy, s1y, s2y, syyc,
-         (s1y * s22 - s2y * s12) * 1000000 // (s11 * s22 - s12 * s12)
-             AS b1_e6,
-         (s2y * s11 - s1y * s12) * 1000000 // (s11 * s22 - s12 * s12)
-             AS b2_e6
-  FROM c
-)
-SELECT CAST(n AS BIGINT) AS n_rows, CAST(b1_e6 AS BIGINT) AS b1_e6,
-       CAST(b2_e6 AS BIGINT) AS b2_e6,
-       CAST((sy * 1000000 - b1_e6 * sx1 - b2_e6 * sx2) // n AS BIGINT)
-           AS intercept_e6,
-       CAST((b1_e6 * s1y + b2_e6 * s2y) // syyc AS BIGINT) AS r2_e6
-FROM b
-"""
-
-
-@register("q_lineitem_ols2", _OLS2_SQL)
-def q_lineitem_ols2(spark, sf_dir):
-    """Two-feature multiple linear regression by exact Cramer's rule:
-    extended price (floored to whole dollars) on quantity and the
-    e2-scaled discount, over the full lineitem scan. The centered normal
-    equations are cleared of every fraction — S_jk = n·Σx_jx_k −
-    Σx_jΣx_k etc. — so the coefficients emerge as integer quotients
-    b1 = (S1y·S22 − S2y·S12)/(S11·S22 − S12²) floored ONCE to e6
-    identically in both engines; intercept and R² = (b1·S1y + b2·S2y)/Syy
-    then reuse the already-floored e6 slopes (identical expressions, so
-    deterministic cross-engine). Exact while S1y·S22·10⁶ < 10³⁸ — holds
-    through sf1 (≈6M rows); beyond that drop y to e0 from e2 or shed the
-    shared 10⁶. Plan: ONE map-side-combinable 10-sum reduction over the
-    scan — the classic single-pass distributed regression; nothing else
-    shuffles."""
-    li = _t(spark, sf_dir, "lineitem")
-    dec = "decimal(38,0)"
-    r = li.select(
-        F.col("l_quantity").cast(dec).alias("x1"),
-        F.floor(F.col("l_discount") * 100 + F.lit(0.5)).cast(dec)
-        .alias("x2"),
-        F.floor(F.col("l_extendedprice")).cast(dec).alias("y"))
-    s = r.agg(F.count(F.lit(1)).cast(dec).alias("n"),
-              F.sum("x1").alias("sx1"), F.sum("x2").alias("sx2"),
-              F.sum("y").alias("sy"),
-              F.sum(F.col("x1") * F.col("x1")).alias("sx11"),
-              F.sum(F.col("x2") * F.col("x2")).alias("sx22"),
-              F.sum(F.col("x1") * F.col("x2")).alias("sx12"),
-              F.sum(F.col("x1") * F.col("y")).alias("sx1y"),
-              F.sum(F.col("x2") * F.col("y")).alias("sx2y"),
-              F.sum(F.col("y") * F.col("y")).alias("syy"))
-    c = s.select(
-        "n", "sx1", "sx2", "sy",
-        F.expr("n * sx11 - sx1 * sx1").alias("s11"),
-        F.expr("n * sx22 - sx2 * sx2").alias("s22"),
-        F.expr("n * sx12 - sx1 * sx2").alias("s12"),
-        F.expr("n * sx1y - sx1 * sy").alias("s1y"),
-        F.expr("n * sx2y - sx2 * sy").alias("s2y"),
-        F.expr("n * syy - sy * sy").alias("syyc"))
-    b = c.select(
-        "n", "sx1", "sx2", "sy", "s1y", "s2y", "syyc",
-        F.expr("CAST((s1y * s22 - s2y * s12) * 1000000"
-               " div (s11 * s22 - s12 * s12) AS DECIMAL(38,0))")
-        .alias("b1_e6"),
-        F.expr("CAST((s2y * s11 - s1y * s12) * 1000000"
-               " div (s11 * s22 - s12 * s12) AS DECIMAL(38,0))")
-        .alias("b2_e6"))
-    return b.select(
-        F.col("n").cast("long").alias("n_rows"),
-        F.col("b1_e6").cast("long").alias("b1_e6"),
-        F.col("b2_e6").cast("long").alias("b2_e6"),
-        F.expr("CAST((sy * 1000000 - b1_e6 * sx1 - b2_e6 * sx2) div n"
-               " AS BIGINT)").alias("intercept_e6"),
-        F.expr("CAST((b1_e6 * s1y + b2_e6 * s2y) div syyc AS BIGINT)")
-        .alias("r2_e6"))
-
-
 from .operators.sketches import countsketch_sql as _countsketch_sql  # noqa: E402
 
 
@@ -19172,2784 +6582,6 @@ def sketch_countsketch_terms(spark, sf_dir):
     toks = docs.select(F.explode(words).alias("tok"))
     return countsketch_estimate(toks, "tok",
                                 [t for t, _ in kg_docs.DOC_LEXICON])
-
-
-_FRIEDMAN_SQL = """
-WITH u AS (
-  SELECT user_id,
-         CAST(count(*) FILTER (WHERE event_type = 'view') AS HUGEINT) AS c1,
-         CAST(count(*) FILTER (WHERE event_type = 'click') AS HUGEINT) AS c2,
-         CAST(count(*) FILTER (WHERE event_type = 'purchase') AS HUGEINT)
-             AS c3
-  FROM events GROUP BY 1
-), r AS (
-  SELECT
-    2 + 2 * ((c2 < c1)::INT + (c3 < c1)::INT)
-      + (c2 = c1)::INT + (c3 = c1)::INT AS r1,
-    2 + 2 * ((c1 < c2)::INT + (c3 < c2)::INT)
-      + (c1 = c2)::INT + (c3 = c2)::INT AS r2,
-    2 + 2 * ((c1 < c3)::INT + (c2 < c3)::INT)
-      + (c1 = c3)::INT + (c2 = c3)::INT AS r3
-  FROM u
-), a AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n,
-         CAST(sum(r1) AS HUGEINT) AS s1, CAST(sum(r2) AS HUGEINT) AS s2,
-         CAST(sum(r3) AS HUGEINT) AS s3,
-         CAST(sum(r1 * r1 + r2 * r2 + r3 * r3) AS HUGEINT) AS a2
-  FROM r
-)
-SELECT CAST(n AS BIGINT) AS n_users, CAST(s1 AS BIGINT) AS r2_view,
-       CAST(s2 AS BIGINT) AS r2_click, CAST(s3 AS BIGINT) AS r2_purchase,
-       CAST(a2 AS BIGINT) AS a2,
-       CAST(CASE WHEN a2 = 48 * n THEN 0
-            ELSE 2 * (s1 * s1 + s2 * s2 + s3 * s3 - 48 * n * n) * 1000000
-                 // (a2 - 48 * n) END AS BIGINT) AS chi2_e6
-FROM a
-"""
-
-
-@register("q_events_friedman", _FRIEDMAN_SQL)
-def q_events_friedman(spark, sf_dir):
-    """Friedman test for k=3 related samples: within each user (the
-    block), their view/click/purchase counts are ranked 1..3 with tied
-    midranks, and the test asks whether one activity systematically
-    outranks the others across users. Ranks are kept DOUBLED so midranks
-    stay integral, and with k=3 they come from direct pairwise
-    comparisons — 2r_j = 2 + 2·#{l: c_l<c_j} + #{l≠j: c_l=c_j} — no
-    window function at all. The tie-corrected statistic multiplies
-    through by 4 to the exact integer form
-    χ² = (k−1)(Σ_j R2_j² − 48n²)/(A2 − 48n) (R2_j = column sums of
-    doubled ranks, A2 = Σ(2r)², 48 = k(k+1)²), an e6 quotient, 0 when
-    every block is fully tied. Plan: one map-side-combinable
-    groupBy(user_id), then per-row constant-time rank arithmetic and a
-    5-cell reduction — nothing but the user aggregate shuffles."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    u = e.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-        .alias("c1"),
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .alias("c2"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .alias("c3"))
-
-    def r2(j, others):
-        lt = sum((F.when(F.col(o) < F.col(j), 1).otherwise(0)
-                  for o in others), F.lit(0))
-        eq = sum((F.when(F.col(o) == F.col(j), 1).otherwise(0)
-                  for o in others), F.lit(0))
-        return F.lit(2) + F.lit(2) * lt + eq
-
-    r = u.select(r2("c1", ["c2", "c3"]).alias("r1"),
-                 r2("c2", ["c1", "c3"]).alias("r2"),
-                 r2("c3", ["c1", "c2"]).alias("r3"))
-    a = r.agg(F.count(F.lit(1)).cast(dec).alias("n"),
-              F.sum("r1").cast(dec).alias("s1"),
-              F.sum("r2").cast(dec).alias("s2"),
-              F.sum("r3").cast(dec).alias("s3"),
-              F.sum(F.col("r1") * F.col("r1") + F.col("r2") * F.col("r2")
-                    + F.col("r3") * F.col("r3")).cast(dec).alias("a2"))
-    return a.select(
-        F.col("n").cast("long").alias("n_users"),
-        F.col("s1").cast("long").alias("r2_view"),
-        F.col("s2").cast("long").alias("r2_click"),
-        F.col("s3").cast("long").alias("r2_purchase"),
-        F.col("a2").cast("long").alias("a2"),
-        F.expr("CAST(CASE WHEN a2 = 48 * n THEN 0"
-               " ELSE 2 * (s1 * s1 + s2 * s2 + s3 * s3 - 48 * n * n)"
-               " * 1000000 div (a2 - 48 * n) END AS BIGINT)")
-        .alias("chi2_e6"))
-
-
-_FS_SQL = """
-WITH n AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM part),
-fb AS (SELECT CAST(sum(c * (c - 1)) AS HUGEINT) AS s2
-       FROM (SELECT CAST(count(*) AS HUGEINT) AS c FROM part
-             GROUP BY p_brand)),
-ft AS (SELECT CAST(sum(c * (c - 1)) AS HUGEINT) AS s2
-       FROM (SELECT CAST(count(*) AS HUGEINT) AS c FROM part
-             GROUP BY p_type)),
-fs AS (SELECT CAST(sum(c * (c - 1)) AS HUGEINT) AS s2
-       FROM (SELECT CAST(count(*) AS HUGEINT) AS c FROM part
-             GROUP BY p_size)),
-w AS (
-  SELECT
-    CAST(floor(ln(0.9 / (CAST(fb.s2 AS DOUBLE)
-                         / CAST(n.n * (n.n - 1) AS DOUBLE)))
-               * 1000000000 + 0.5) AS BIGINT) AS wa_brand,
-    CAST(floor(ln(0.1 / (1.0 - CAST(fb.s2 AS DOUBLE)
-                         / CAST(n.n * (n.n - 1) AS DOUBLE)))
-               * 1000000000 + 0.5) AS BIGINT) AS wd_brand,
-    CAST(floor(ln(0.85 / (CAST(ft.s2 AS DOUBLE)
-                          / CAST(n.n * (n.n - 1) AS DOUBLE)))
-               * 1000000000 + 0.5) AS BIGINT) AS wa_type,
-    CAST(floor(ln(0.15 / (1.0 - CAST(ft.s2 AS DOUBLE)
-                          / CAST(n.n * (n.n - 1) AS DOUBLE)))
-               * 1000000000 + 0.5) AS BIGINT) AS wd_type,
-    CAST(floor(ln(0.8 / (CAST(fs.s2 AS DOUBLE)
-                         / CAST(n.n * (n.n - 1) AS DOUBLE)))
-               * 1000000000 + 0.5) AS BIGINT) AS wa_size,
-    CAST(floor(ln(0.2 / (1.0 - CAST(fs.s2 AS DOUBLE)
-                         / CAST(n.n * (n.n - 1) AS DOUBLE)))
-               * 1000000000 + 0.5) AS BIGINT) AS wd_size
-  FROM n, fb, ft, fs
-), pairs AS (
-  SELECT (a.p_brand = b.p_brand)::INT AS agree_brand,
-         (a.p_type = b.p_type)::INT AS agree_type,
-         (a.p_size = b.p_size)::INT AS agree_size
-  FROM part a JOIN part b
-    ON a.p_name = b.p_name AND a.p_partkey < b.p_partkey
-)
-SELECT agree_brand, agree_type, agree_size,
-       CAST(count(*) AS BIGINT) AS n_pairs,
-       CAST(CASE WHEN agree_brand = 1 THEN max(w.wa_brand)
-                 ELSE max(w.wd_brand) END
-          + CASE WHEN agree_type = 1 THEN max(w.wa_type)
-                 ELSE max(w.wd_type) END
-          + CASE WHEN agree_size = 1 THEN max(w.wa_size)
-                 ELSE max(w.wd_size) END AS BIGINT) AS weight_e9
-FROM pairs, w
-GROUP BY 1, 2, 3
-"""
-
-
-@register("q_parts_fellegi_sunter", _FS_SQL)
-def q_parts_fellegi_sunter(spark, sf_dir):
-    """Fellegi-Sunter probabilistic record linkage (JASA 1969) over
-    name-blocked part pairs: candidate pairs share p_name, and each pair
-    gets an agreement pattern on (brand, type, size). u-probabilities —
-    P(field agrees | random non-match) — are estimated exactly from value
-    frequencies as Σc(c−1)/(N(N−1)); m-probabilities are the engine's
-    fixed reliabilities (0.9/0.85/0.8). Each field's agree/disagree log
-    weight ln(m/u) / ln((1−m)/(1−u)) is a double built from exact integer
-    counts by identically-shaped expressions in both engines and
-    e9-floored ONCE (the repo's JSD/MI discipline), so the per-pattern
-    match weight is an exact integer sum. Output: the 8-row pattern table
-    with pair counts and composite weights — the decision table a linker
-    thresholds. Plan: blocking keeps candidate generation keyed on
-    p_name (never all-pairs); the three frequency passes are map-side-
-    combinable groupBys and the 1-row weight table broadcasts onto the
-    pattern aggregate."""
-    p = _t(spark, sf_dir, "part")
-    dec = "decimal(38,0)"
-
-    def u_expr(col):
-        f = (p.groupBy(col).agg(F.count(F.lit(1)).cast(dec).alias("c"))
-             .agg(F.sum(F.col("c") * (F.col("c") - 1)).alias("s2")))
-        return f
-
-    n = p.agg(F.count(F.lit(1)).cast(dec).alias("n"))
-    w = (u_expr("p_brand").withColumnRenamed("s2", "s2b")
-         .crossJoin(u_expr("p_type").withColumnRenamed("s2", "s2t"))
-         .crossJoin(u_expr("p_size").withColumnRenamed("s2", "s2s"))
-         .crossJoin(n))
-    pairs_w = []
-    for key, m, s2col in (("brand", "0.9", "s2b"), ("type", "0.85", "s2t"),
-                          ("size", "0.8", "s2s")):
-        md = {"0.9": "0.1", "0.85": "0.15", "0.8": "0.2"}[m]
-        u = (f"(CAST({s2col} AS DOUBLE) / CAST(n * (n - 1) AS DOUBLE))")
-        pairs_w.append(F.expr(
-            f"CAST(floor(ln({m} / {u}) * 1000000000 + 0.5) AS BIGINT)")
-            .alias(f"wa_{key}"))
-        pairs_w.append(F.expr(
-            f"CAST(floor(ln({md} / (1.0 - {u})) * 1000000000 + 0.5)"
-            " AS BIGINT)").alias(f"wd_{key}"))
-    w = w.select(*pairs_w)
-    a, b = p.alias("a"), p.alias("b")
-    pairs = (a.join(b, (F.col("a.p_name") == F.col("b.p_name"))
-                    & (F.col("a.p_partkey") < F.col("b.p_partkey")))
-             .select((F.col("a.p_brand") == F.col("b.p_brand")).cast("int")
-                     .alias("agree_brand"),
-                     (F.col("a.p_type") == F.col("b.p_type")).cast("int")
-                     .alias("agree_type"),
-                     (F.col("a.p_size") == F.col("b.p_size")).cast("int")
-                     .alias("agree_size")))
-    pat = (pairs.groupBy("agree_brand", "agree_type", "agree_size")
-           .agg(F.count(F.lit(1)).cast("long").alias("n_pairs")))
-    return (pat.crossJoin(F.broadcast(w))
-            .select("agree_brand", "agree_type", "agree_size", "n_pairs",
-                    (F.when(F.col("agree_brand") == 1, F.col("wa_brand"))
-                     .otherwise(F.col("wd_brand"))
-                     + F.when(F.col("agree_type") == 1, F.col("wa_type"))
-                     .otherwise(F.col("wd_type"))
-                     + F.when(F.col("agree_size") == 1, F.col("wa_size"))
-                     .otherwise(F.col("wd_size"))).cast("long")
-                    .alias("weight_e9")))
-
-
-def _pcx_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the REAL PCX decode path: pixels are pure formulas of
-    (x, y, id) (sources/multimodal.synthetic_pcx_media), so expected
-    channel means are recomputed here in plain Python with no PCX bytes —
-    a wrong RLE count, plane order, or pad-strip flips the hash."""
-    rows = []
-    for i in range(n):
-        w = 15 + (i * 3 + seed) % 11
-        h = 9 + (i * 5 + seed) % 12
-        rs = gs = bs = 0
-        for y in range(h):
-            for x in range(w):
-                rs += ((y // 3) * 50 + i * 13) % 256
-                gs += (x * 11 + y * 17 + i) % 256
-                bs += 0xC8 if (x + i) % 5 == 0 else (x * 2 + i) % 0xC0
-        npx = w * h
-        rows.append(f"({i}, {w}, {h}, {rs / npx!r}, {gs / npx!r},"
-                    f" {bs / npx!r})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(r_mean AS DOUBLE) AS r_mean,"
-            f" CAST(g_mean AS DOUBLE) AS g_mean,"
-            f" CAST(b_mean AS DOUBLE) AS b_mean"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, r_mean, g_mean, b_mean)")
-
-
-@register("multimodal_pcx_features", _pcx_fixture_sql())
-def multimodal_pcx_features(spark, sf_dir):
-    """REAL PCX (ZSoft Paintbrush) decode end to end inside mapInPandas:
-    version-5 header walk, RLE with 0xC0-marker escape semantics, 3-plane
-    planar→interleaved reshape, even bytes-per-line pad strip
-    (sources/multimodal.decode_pcx) — stdlib + numpy only."""
-    from .sources.multimodal import (
-        extract_image_features_real,
-        synthetic_pcx_media,
-    )
-    return extract_image_features_real(synthetic_pcx_media(spark, 30)) \
-        .select("media_id", "width", "height",
-                "r_mean", "g_mean", "b_mean")
-
-
-def _midi_fixture_sql(n: int = 30) -> str:
-    """Oracle for the REAL SMF parse path: notes and tempo are the pure
-    formulas of sources/multimodal.midi_note_formula, so every expected
-    feature is closed-form integer arithmetic with no MIDI bytes — a
-    wrong VLQ continuation bit, running-status drop, or meta-length skip
-    flips the hash."""
-    rows = []
-    for i in range(n):
-        k = 8 + i % 8
-        notes = [((i + j) % 64 + 1, 24 + (j % 4) * 12,
-                  40 + (i * 7 + j * 5) % 48, 32 + (i * 3 + j * 11) % 96)
-                 for j in range(k)]
-        rows.append(
-            f"({i}, 2, 480, {500000 - i * 1000}, {k},"
-            f" {sum(d + du for d, du, _, _ in notes)},"
-            f" {sum(p for _, _, p, _ in notes)},"
-            f" {sum(v for _, _, _, v in notes)})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(n_tracks AS BIGINT) AS n_tracks,"
-            f" CAST(division AS BIGINT) AS division,"
-            f" CAST(tempo_us AS BIGINT) AS tempo_us,"
-            f" CAST(n_notes AS BIGINT) AS n_notes,"
-            f" CAST(total_ticks AS BIGINT) AS total_ticks,"
-            f" CAST(pitch_sum AS BIGINT) AS pitch_sum,"
-            f" CAST(vel_sum AS BIGINT) AS vel_sum"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, n_tracks, division, tempo_us, n_notes,"
-            f" total_ticks, pitch_sum, vel_sum)")
-
-
-@register("multimodal_midi_features", _midi_fixture_sql())
-def multimodal_midi_features(spark, sf_dir):
-    """REAL Standard MIDI File parse end to end inside mapInPandas:
-    MThd/MTrk chunk walk, variable-length deltas, RUNNING STATUS (the
-    note track omits repeated 0x90 bytes), Set-Tempo meta extraction,
-    the 1-vs-2 data-byte channel-message rule, and per-track tick
-    accumulation (sources/multimodal.parse_midi) — stdlib only.
-    Symbolic-music metadata as a first-class multimodal column."""
-    from .sources.multimodal import (
-        extract_midi_features,
-        synthetic_midi_media,
-    )
-    return extract_midi_features(synthetic_midi_media(spark, 30))
-
-
-_PR_AUC_SQL = """
-WITH s0 AS (
-  SELECT user_id,
-         CAST(sum(CASE WHEN event_type <> 'purchase' THEN 1 ELSE 0 END)
-              AS HUGEINT) AS score,
-         CAST(sum(CASE WHEN event_type = 'purchase'
-                  THEN CAST(floor("value" * 100 + 0.5) AS HUGEINT)
-                  ELSE 0 END) AS HUGEINT) AS spend
-  FROM events GROUP BY 1
-), sm AS (
-  SELECT user_id, spend,
-         row_number() OVER (ORDER BY spend, user_id) AS rn,
-         count(*) OVER () AS n
-  FROM s0
-), med AS (SELECT spend AS m FROM sm WHERE rn = (n + 1) // 2),
-u AS (
-  SELECT score,
-         CASE WHEN spend > (SELECT m FROM med) THEN 1 ELSE 0 END AS pos
-  FROM s0
-), v AS (
-  SELECT score, CAST(count(*) AS HUGEINT) AS c,
-         CAST(sum(pos) AS HUGEINT) AS tp
-  FROM u GROUP BY 1
-), c AS (
-  SELECT tp, sum(c) OVER (ORDER BY score DESC) AS cpred,
-         sum(tp) OVER (ORDER BY score DESC) AS ctp
-  FROM v
-), a AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n_thresholds,
-         sum(tp * ctp * 1000000000 // cpred) AS ap_num_e9,
-         max(ctp) AS np, max(cpred) AS n
-  FROM c
-)
-SELECT CAST(n AS BIGINT) AS n_users, CAST(np AS BIGINT) AS n_pos,
-       CAST(n_thresholds AS BIGINT) AS n_thresholds,
-       CAST(ap_num_e9 // (np * 1000) AS BIGINT) AS ap_e6,
-       CAST(np * 1000000 // n AS BIGINT) AS prevalence_e6
-FROM a
-"""
-
-
-@register("q_events_pr_auc", _PR_AUC_SQL)
-def q_events_pr_auc(spark, sf_dir):
-    """Average precision (PR-AUC by the step-interpolation definition
-    scikit-learn uses) for the q_events_auc_roc scorer — on an imbalanced
-    median-split label PR is the honest curve where ROC flatters. At each
-    DISTINCT score threshold (descending): ΔRecall·Precision =
-    (tp_s/P)·(ctp_s/cpred_s); each term's precision quotient is floored
-    ONCE to e9 from exact integer cumulative counts (identical expression
-    both engines), the weighted sum then divided by n_pos — no float ever
-    forms. Prevalence rides along as the no-skill baseline. Plan: one
-    map-side-combinable user aggregate, then the curve collapses to
-    DISTINCT scores before the single ordered cumulative window — window
-    input is score cardinality, never user count."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    s0 = e.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") != "purchase", 1).otherwise(0))
-        .cast(dec).alias("score"),
-        F.sum(F.when(F.col("event_type") == "purchase",
-                     F.floor(F.col("value") * 100 + F.lit(0.5)))
-              .otherwise(0)).cast(dec).alias("spend"))
-    sm = s0.select(
-        "spend",
-        F.row_number().over(Window.orderBy("spend", "user_id")).alias("rn"),
-        F.count(F.lit(1)).over(Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("n"))
-    med = (sm.filter(F.expr("rn = (n + 1) div 2"))
-           .select(F.col("spend").alias("m")))
-    u = (s0.crossJoin(F.broadcast(med))
-         .select("score",
-                 F.when(F.col("spend") > F.col("m"), 1).otherwise(0)
-                 .alias("pos")))
-    v = u.groupBy("score").agg(F.count(F.lit(1)).cast(dec).alias("c"),
-                               F.sum("pos").cast(dec).alias("tp"))
-    w = Window.orderBy(F.col("score").desc())
-    c = v.select("tp", F.sum("c").over(w).alias("cpred"),
-                 F.sum("tp").over(w).alias("ctp"))
-    a = c.agg(
-        F.count(F.lit(1)).cast(dec).alias("n_thresholds"),
-        F.sum(F.expr("CAST(tp * ctp * 1000000000 div cpred"
-                     " AS DECIMAL(38,0))")).alias("ap_num_e9"),
-        F.max("ctp").alias("np"), F.max("cpred").alias("n"))
-    return a.select(
-        F.col("n").cast("long").alias("n_users"),
-        F.col("np").cast("long").alias("n_pos"),
-        F.col("n_thresholds").cast("long").alias("n_thresholds"),
-        F.expr("CAST(ap_num_e9 div (np * 1000) AS BIGINT)").alias("ap_e6"),
-        F.expr("CAST(np * 1000000 div n AS BIGINT)").alias("prevalence_e6"))
-
-
-_ENERGY_SQL = """
-WITH y AS (
-  SELECT CAST(floor("value" * 100 + 0.5) AS HUGEINT) AS y,
-         CASE WHEN isodow(CAST(ts AS TIMESTAMP)) >= 6 THEN 1 ELSE 0 END
-             AS grp
-  FROM events
-), v AS (
-  SELECT y,
-         CAST(count(*) FILTER (WHERE grp = 0) AS HUGEINT) AS ca,
-         CAST(count(*) FILTER (WHERE grp = 1) AS HUGEINT) AS cb
-  FROM y GROUP BY 1
-), c AS (
-  SELECT y, ca, cb,
-         coalesce(sum(ca) OVER w, 0) AS cab, coalesce(sum(cb) OVER w, 0)
-             AS cbb,
-         coalesce(sum(ca * y) OVER w, 0) AS sab,
-         coalesce(sum(cb * y) OVER w, 0) AS sbb
-  FROM v
-  WINDOW w AS (ORDER BY y ROWS BETWEEN UNBOUNDED PRECEDING
-               AND 1 PRECEDING)
-), s AS (
-  SELECT sum(ca) AS n, sum(cb) AS m,
-         sum(ca * (y * cbb - sbb) + cb * (y * cab - sab)) AS sxy,
-         sum(ca * (y * cab - sab)) AS sxx,
-         sum(cb * (y * cbb - sbb)) AS syy
-  FROM c
-)
-SELECT CAST(n AS BIGINT) AS n_weekday, CAST(m AS BIGINT) AS n_weekend,
-       CAST(sxy AS BIGINT) AS sum_cross_absdiff,
-       CAST((2 * sxy * n * m - 2 * sxx * m * m - 2 * syy * n * n)
-            * 1000000 // (n * n * m * m) AS BIGINT) AS energy_e6
-FROM s
-"""
-
-
-@register("q_events_energy_distance", _ENERGY_SQL)
-def q_events_energy_distance(spark, sf_dir):
-    """Székely's energy distance between the weekday and weekend value
-    distributions — the metric two-sample test (zero iff the
-    distributions match): E = 2·E|X−Y| − E|X−X'| − E|Y−Y'|. Every
-    pairwise-|difference| sum collapses to ONE ordered pass over
-    DISTINCT e2 values via the prefix-sum identity
-    Σ_{b<y}(y−b) = y·cnt_below − sum_below, so the O(n²) pair space is
-    never materialized and everything stays exact integer; the statistic
-    lands over the common denominator n²m² as a single e6 quotient.
-    Plan: one map-side-combinable groupBy on distinct values, one
-    cumulative window over value cardinality (≈2000 rows regardless of
-    row count), one 5-cell reduction."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    y = e.select(
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast(dec).alias("y"),
-        F.when(F.expr("weekday(ts)") >= 5, 1).otherwise(0).alias("grp"))
-    v = y.groupBy("y").agg(
-        F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).cast(dec)
-        .alias("ca"),
-        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).cast(dec)
-        .alias("cb"))
-    w = Window.orderBy("y").rowsBetween(Window.unboundedPreceding, -1)
-    z = F.lit(0).cast(dec)
-    c = v.select(
-        "y", "ca", "cb",
-        F.coalesce(F.sum("ca").over(w), z).alias("cab"),
-        F.coalesce(F.sum("cb").over(w), z).alias("cbb"),
-        F.coalesce(F.sum(F.col("ca") * F.col("y")).over(w), z).alias("sab"),
-        F.coalesce(F.sum(F.col("cb") * F.col("y")).over(w), z).alias("sbb"))
-    s = c.agg(
-        F.sum("ca").alias("n"), F.sum("cb").alias("m"),
-        F.sum(F.col("ca") * (F.col("y") * F.col("cbb") - F.col("sbb"))
-              + F.col("cb") * (F.col("y") * F.col("cab") - F.col("sab")))
-        .alias("sxy"),
-        F.sum(F.col("ca") * (F.col("y") * F.col("cab") - F.col("sab")))
-        .alias("sxx"),
-        F.sum(F.col("cb") * (F.col("y") * F.col("cbb") - F.col("sbb")))
-        .alias("syy"))
-    return s.select(
-        F.col("n").cast("long").alias("n_weekday"),
-        F.col("m").cast("long").alias("n_weekend"),
-        F.col("sxy").cast("long").alias("sum_cross_absdiff"),
-        F.expr("CAST((2 * sxy * n * m - 2 * sxx * m * m"
-               " - 2 * syy * n * n) * 1000000 div (n * n * m * m)"
-               " AS BIGINT)").alias("energy_e6"))
-
-
-_CHAO1_SQL = """
-WITH u AS (
-  SELECT user_id, CAST(count(*) AS HUGEINT) AS c FROM events GROUP BY 1
-), a AS (
-  SELECT CAST(count(*) AS HUGEINT) AS s_obs,
-         CAST(count(*) FILTER (WHERE c = 1) AS HUGEINT) AS f1,
-         CAST(count(*) FILTER (WHERE c = 2) AS HUGEINT) AS f2,
-         sum(c) AS n
-  FROM u
-)
-SELECT CAST(s_obs AS BIGINT) AS s_obs, CAST(f1 AS BIGINT) AS f1,
-       CAST(f2 AS BIGINT) AS f2, CAST(n AS BIGINT) AS n_events,
-       CAST(CASE WHEN f2 > 0 THEN s_obs * 1000000 + f1 * f1 * 1000000
-                                  // (2 * f2)
-            ELSE s_obs * 1000000 + f1 * (f1 - 1) * 500000 END AS BIGINT)
-           AS chao1_e6,
-       CAST((n - f1) * 1000000 // n AS BIGINT) AS coverage_e6
-FROM a
-"""
-
-
-@register("q_events_chao1", _CHAO1_SQL)
-def q_events_chao1(spark, sf_dir):
-    """Chao1 species-richness estimate of the TRUE user population from
-    the event sample — the capture-recapture sibling of the HLL distinct
-    sketch: Ŝ = S_obs + f1²/(2f2) from the singleton/doubleton abundance
-    counts (the f2=0 branch uses Chao's f1(f1−1)/2 correction), plus
-    Good's sample coverage Ĉ = 1 − f1/N. Both estimators are exact
-    integer quotients of exact counts, floored once to e6 identically in
-    both engines. Plan: one map-side-combinable groupBy(user_id) and a
-    4-cell reduction — the scan is the whole cost at any scale."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    u = e.groupBy("user_id").agg(F.count(F.lit(1)).cast(dec).alias("c"))
-    a = u.agg(
-        F.count(F.lit(1)).cast(dec).alias("s_obs"),
-        F.sum(F.when(F.col("c") == 1, 1).otherwise(0)).cast(dec)
-        .alias("f1"),
-        F.sum(F.when(F.col("c") == 2, 1).otherwise(0)).cast(dec)
-        .alias("f2"),
-        F.sum("c").alias("n"))
-    return a.select(
-        F.col("s_obs").cast("long").alias("s_obs"),
-        F.col("f1").cast("long").alias("f1"),
-        F.col("f2").cast("long").alias("f2"),
-        F.col("n").cast("long").alias("n_events"),
-        F.expr("CAST(CASE WHEN f2 > 0 THEN s_obs * 1000000"
-               " + f1 * f1 * 1000000 div (2 * f2)"
-               " ELSE s_obs * 1000000 + f1 * (f1 - 1) * 500000 END"
-               " AS BIGINT)").alias("chao1_e6"),
-        F.expr("CAST((n - f1) * 1000000 div n AS BIGINT)")
-        .alias("coverage_e6"))
-
-
-_GOOD_TURING_SQL = """
-WITH f AS (
-  SELECT tok, CAST(count(*) AS HUGEINT) AS r
-  FROM (SELECT unnest(list_filter(string_split_regex(lower(trim(text)),
-               '\\s+'), w -> w != '')) AS tok FROM documents)
-  GROUP BY 1
-), ff AS (
-  SELECT r, CAST(count(*) AS HUGEINT) AS n_r FROM f GROUP BY 1
-), tot AS (SELECT sum(r * n_r) AS n_tokens FROM ff)
-SELECT CAST(a.r AS BIGINT) AS r, CAST(a.n_r AS BIGINT) AS n_r,
-       CAST(coalesce(b.n_r, 0) AS BIGINT) AS n_r1,
-       CAST((a.r + 1) * coalesce(b.n_r, 0) * 1000000 // a.n_r AS BIGINT)
-           AS r_star_e6,
-       CAST((SELECT sum(n_r) FROM ff WHERE r = 1) * 1000000
-            // (SELECT n_tokens FROM tot) AS BIGINT) AS p0_e6
-FROM ff a LEFT JOIN ff b ON b.r = a.r + 1
-WHERE a.r <= 8
-"""
-
-
-@register("text_good_turing", _GOOD_TURING_SQL)
-def text_good_turing(spark, sf_dir):
-    """Good-Turing frequency-of-frequencies smoothing table over the
-    document token stream: for each raw count r ≤ 8, the adjusted count
-    r* = (r+1)·N_{r+1}/N_r (the discount every GT-smoothed language model
-    applies to rare events), with the unseen-mass estimate p₀ = N₁/N
-    riding along on every row. All quotients are exact integer e6 floors
-    of exact type counts — identical in both engines. Plan: one
-    tokenize+groupBy for type counts, a second tiny groupBy to the
-    frequency-of-frequencies table (≤ max-count rows), and a self-join
-    on r+1 — past the token aggregate everything is O(distinct counts)."""
-    docs = _t(spark, sf_dir, "documents")
-    dec = "decimal(38,0)"
-    words = F.filter(F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-                     lambda w: w != "")
-    f = (docs.select(F.explode(words).alias("tok"))
-         .groupBy("tok").agg(F.count(F.lit(1)).cast(dec).alias("r")))
-    ff = f.groupBy("r").agg(F.count(F.lit(1)).cast(dec).alias("n_r"))
-    tot = ff.agg(F.sum(F.col("r") * F.col("n_r")).alias("n_tokens"))
-    n1 = (ff.filter(F.col("r") == 1)
-          .agg(F.sum("n_r").alias("n1")))
-    b = ff.select(F.col("r").alias("r1"), F.col("n_r").alias("n_r1"))
-    return (ff.filter(F.col("r") <= 8)
-            .join(F.broadcast(b), F.col("r1") == F.col("r") + 1, "left")
-            .crossJoin(F.broadcast(tot)).crossJoin(F.broadcast(n1))
-            .select(
-                F.col("r").cast("long").alias("r"),
-                F.col("n_r").cast("long").alias("n_r"),
-                F.coalesce(F.col("n_r1"), F.lit(0).cast(dec)).cast("long")
-                .alias("n_r1"),
-                F.expr("CAST((r + 1) * coalesce(n_r1, CAST(0 AS"
-                       " DECIMAL(38,0))) * 1000000 div n_r AS BIGINT)")
-                .alias("r_star_e6"),
-                F.expr("CAST(n1 * 1000000 div n_tokens AS BIGINT)")
-                .alias("p0_e6")))
-
-
-_RCA_SQL = """
-WITH x AS (
-  SELECT n.n_name AS nation, p.p_type AS p_type,
-         CAST(sum(CAST(floor(l.l_extendedprice) AS HUGEINT)) AS HUGEINT)
-             AS rev
-  FROM lineitem l
-  JOIN supplier s ON s.s_suppkey = l.l_suppkey
-  JOIN nation n ON n.n_nationkey = s.s_nationkey
-  JOIN part p ON p.p_partkey = l.l_partkey
-  GROUP BY 1, 2
-), m AS (
-  SELECT nation, p_type, rev,
-         sum(rev) OVER (PARTITION BY nation) AS rev_i,
-         sum(rev) OVER (PARTITION BY p_type) AS rev_j,
-         sum(rev) OVER () AS rev_all
-  FROM x
-)
-SELECT nation, p_type, CAST(rev AS BIGINT) AS revenue,
-       CAST(rev * rev_all * 1000000 // (rev_i * rev_j) AS BIGINT)
-           AS rca_e6
-FROM m
-"""
-
-
-@register("q_nation_rca", _RCA_SQL)
-def q_nation_rca(spark, sf_dir):
-    """Balassa revealed comparative advantage over the nation × part-type
-    trade matrix: RCA_ij = (x_ij/x_i·)/(x_·j/x_··) — which product
-    categories does each supplier nation over-index in? Cross-multiplied
-    to the single exact quotient x_ij·x_·· / (x_i·…x_·j) and floored once
-    to e6 (>1e6 = revealed advantage). Plan: the fact scan broadcast-
-    joins the three dims, one map-side-combinable groupBy to the 25×6
-    cell table, then the margins come from windows over those 150 rows —
-    nothing data-sized shuffles twice."""
-    li = _t(spark, sf_dir, "lineitem")
-    su = _t(spark, sf_dir, "supplier")
-    na = _t(spark, sf_dir, "nation")
-    pa = _t(spark, sf_dir, "part")
-    dec = "decimal(38,0)"
-    x = (li.join(F.broadcast(su), li["l_suppkey"] == su["s_suppkey"])
-         .join(F.broadcast(na), su["s_nationkey"] == na["n_nationkey"])
-         .join(F.broadcast(pa.select("p_partkey", "p_type")),
-               li["l_partkey"] == F.col("p_partkey"))
-         .groupBy(F.col("n_name").alias("nation"), "p_type")
-         .agg(F.sum(F.floor(F.col("l_extendedprice"))).cast(dec)
-              .alias("rev")))
-    m = x.select(
-        "nation", "p_type", "rev",
-        F.sum("rev").over(Window.partitionBy("nation")).alias("rev_i"),
-        F.sum("rev").over(Window.partitionBy("p_type")).alias("rev_j"),
-        F.sum("rev").over(Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("rev_all"))
-    return m.select(
-        "nation", "p_type", F.col("rev").cast("long").alias("revenue"),
-        F.expr("CAST(rev * rev_all * 1000000 div (rev_i * rev_j)"
-               " AS BIGINT)").alias("rca_e6"))
-
-
-_DISPERSION_SQL = """
-WITH d AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(count(*) AS HUGEINT) AS x
-  FROM events GROUP BY 1, 2
-), a AS (
-  SELECT event_type, CAST(count(*) AS HUGEINT) AS n_days,
-         sum(x) AS sx, sum(x * x) AS sxx
-  FROM d GROUP BY 1
-)
-SELECT event_type, CAST(n_days AS BIGINT) AS n_days,
-       CAST(sx AS BIGINT) AS n_events,
-       CAST((n_days * sxx - sx * sx) * 1000000 // sx AS BIGINT) AS chi2_e6,
-       CAST((n_days * sxx - sx * sx) * 1000000
-            // (sx * (n_days - 1)) AS BIGINT) AS vmr_e6
-FROM a
-"""
-
-
-@register("q_events_dispersion", _DISPERSION_SQL)
-def q_events_dispersion(spark, sf_dir):
-    """Poisson dispersion test (index of dispersion) per event type on
-    the daily count series over OBSERVED days: χ² = Σ(x−x̄)²/x̄ collapses
-    to the fraction-free exact form (D·Σx² − (Σx)²)/Σx, and the
-    variance-to-mean ratio (≈1 under Poisson, >1 = bursty/overdispersed,
-    the regime check before fitting any count model) is the same
-    numerator over Σx·(D−1); both floored once to e6 identically in both
-    engines. Plan: one map-side-combinable (type, day) groupBy, then a
-    per-type 3-cell reduction over O(types × calendar) rows."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d = (e.groupBy("event_type", F.col("ts").cast("date").alias("day"))
-         .agg(F.count(F.lit(1)).cast(dec).alias("x")))
-    a = d.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast(dec).alias("n_days"),
-        F.sum("x").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"))
-    return a.select(
-        "event_type",
-        F.col("n_days").cast("long").alias("n_days"),
-        F.col("sx").cast("long").alias("n_events"),
-        F.expr("CAST((n_days * sxx - sx * sx) * 1000000 div sx AS BIGINT)")
-        .alias("chi2_e6"),
-        F.expr("CAST((n_days * sxx - sx * sx) * 1000000"
-               " div (sx * (n_days - 1)) AS BIGINT)").alias("vmr_e6"))
-
-
-_KM_SQL = """
-WITH e AS (
-  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events
-), g AS (
-  SELECT user_id, us,
-         CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us) IS NULL
-                   OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us)
-                      > 1800000000
-              THEN 1 ELSE 0 END AS brk
-  FROM e
-), s AS (
-  SELECT user_id, us,
-         sum(brk) OVER (PARTITION BY user_id ORDER BY us) AS sid
-  FROM g
-), sess AS (
-  SELECT user_id, sid, min(us) AS t0, max(us) AS t1 FROM s GROUP BY 1, 2
-), b AS (SELECT max(us) AS mx FROM e),
-dur AS (
-  SELECT (t1 - t0) // 60000000 AS t,
-         (t1 > (SELECT mx FROM b) - 1800000000) AS censored
-  FROM sess
-), ev AS (
-  SELECT t, CAST(count(*) AS HUGEINT) AS a,
-         CAST(count(*) FILTER (WHERE NOT censored) AS HUGEINT) AS d
-  FROM dur GROUP BY t
-), risk AS (
-  SELECT t, d, sum(a) OVER (ORDER BY t DESC) AS n FROM ev
-), terms AS (
-  SELECT t, d, n,
-         CAST(floor(ln(CAST(n - d AS DOUBLE) / CAST(n AS DOUBLE))
-                    * 1000000000 + 0.5) AS BIGINT) AS lt_e9
-  FROM risk WHERE d > 0 AND n > d
-)
-SELECT CAST(t AS BIGINT) AS t_minutes, CAST(n AS BIGINT) AS n_risk,
-       CAST(d AS BIGINT) AS n_deaths,
-       CAST(sum(lt_e9) OVER (ORDER BY t) AS BIGINT) AS log_surv_e9
-FROM terms
-"""
-
-
-@register("q_events_kaplan_meier", _KM_SQL)
-def q_events_kaplan_meier(spark, sf_dir):
-    """Kaplan-Meier survival curve of session duration (the logrank
-    sessionization: 30-min gap, right-censoring within 30 min of corpus
-    end): at each distinct death time, Ŝ(t) = Π(1 − d_i/n_i) reported as
-    the cumulative LOG survival — each per-time ln((n−d)/n) is a double
-    from exact integer counts, floored ONCE to e9 by identical
-    expressions in both engines, then integer-summed by the ordered
-    window, so the product's float accumulation order can't drift.
-    Times where everyone at risk dies (n = d, Ŝ → 0) are excluded by the
-    standard convention. Plan: one user-partitioned sessionize window,
-    collapse to distinct duration-minutes, then the at-risk and
-    cumulative-log windows run over O(calendar) rows, never
-    O(sessions)."""
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("us"))
-    w = Window.partitionBy("user_id").orderBy("us")
-    gap = F.col("us") - F.lag("us").over(w)
-    s = (e.withColumn("brk", F.when(F.lag("us").over(w).isNull()
-                                    | (gap > 1_800_000_000), 1).otherwise(0))
-         .withColumn("sid", F.sum("brk").over(w)))
-    sess = (s.groupBy("user_id", "sid")
-            .agg(F.min("us").alias("t0"), F.max("us").alias("t1")))
-    b = e.agg(F.max("us").alias("mx"))
-    dec = "decimal(38,0)"
-    dur = (sess.crossJoin(F.broadcast(b))
-           .select(F.expr("(t1 - t0) div 60000000").alias("t"),
-                   (F.col("t1") > F.col("mx") - 1_800_000_000)
-                   .alias("censored")))
-    ev = dur.groupBy("t").agg(
-        F.count(F.lit(1)).cast(dec).alias("a"),
-        F.sum(F.when(~F.col("censored"), 1).otherwise(0)).cast(dec)
-        .alias("d"))
-    risk = ev.select(
-        "t", "d",
-        F.sum("a").over(Window.orderBy(F.col("t").desc())).alias("n"))
-    terms = (risk.filter((F.col("d") > 0) & (F.col("n") > F.col("d")))
-             .select("t", "d", "n",
-                     F.expr("CAST(floor(ln(CAST(n - d AS DOUBLE)"
-                            " / CAST(n AS DOUBLE)) * 1000000000 + 0.5)"
-                            " AS BIGINT)").alias("lt_e9")))
-    return terms.select(
-        F.col("t").cast("long").alias("t_minutes"),
-        F.col("n").cast("long").alias("n_risk"),
-        F.col("d").cast("long").alias("n_deaths"),
-        F.sum("lt_e9").over(Window.orderBy("t")).cast("long")
-        .alias("log_surv_e9"))
-
-
-def _sprt_consts(p0=0.05, p1=0.06, alpha=0.05, beta=0.2):
-    """SPRT log-likelihood-ratio increments and Wald boundaries as e9
-    INTEGER literals computed once here and injected into BOTH engines —
-    the float ln never runs inside either engine, so cross-engine libm
-    ulp differences are impossible by construction."""
-    import math
-    la = math.floor(math.log(p1 / p0) * 1e9 + 0.5)           # per success
-    lb = math.floor(math.log((1 - p1) / (1 - p0)) * 1e9 + 0.5)  # per failure
-    up = math.floor(math.log((1 - beta) / alpha) * 1e9 + 0.5)
-    lo = math.floor(math.log(beta / (1 - alpha)) * 1e9 + 0.5)
-    return la, lb, up, lo
-
-
-_SPRT_LA, _SPRT_LB, _SPRT_UP, _SPRT_LO = _sprt_consts()
-
-_SPRT_SQL = f"""
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CAST(count(*) AS HUGEINT) AS n,
-         CAST(count(*) FILTER (WHERE event_type = 'purchase') AS HUGEINT)
-             AS x
-  FROM events GROUP BY 1
-), c AS (
-  SELECT day, n, x,
-         sum(x * {_SPRT_LA} + (n - x) * {_SPRT_LB})
-             OVER (ORDER BY day) AS llr_e9
-  FROM d
-)
-SELECT day, CAST(n AS BIGINT) AS n_events, CAST(x AS BIGINT) AS n_purchases,
-       CAST(llr_e9 AS BIGINT) AS llr_e9,
-       CASE WHEN llr_e9 >= {_SPRT_UP} THEN 'accept_h1'
-            WHEN llr_e9 <= {_SPRT_LO} THEN 'accept_h0'
-            ELSE 'continue' END AS decision
-FROM c
-"""
-
-
-@register("q_events_sprt", _SPRT_SQL)
-def q_events_sprt(spark, sf_dir):
-    """Wald's sequential probability ratio test monitoring the daily
-    purchase rate — H0: p = 5% vs H1: p = 6% at α = 0.05, β = 0.2: the
-    running log-likelihood ratio after each day with Wald's decision
-    boundaries ln((1−β)/α) / ln(β/(1−α)). The per-observation LLR
-    increments and both boundaries are e9 INTEGER constants precomputed
-    once in Python and injected into both engines, so the cumulative LLR
-    is pure integer arithmetic — the sequential-testing primitive with
-    zero float surface. Plan: one map-side-combinable daily groupBy,
-    then one ordered cumulative window over O(calendar) rows."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d = (e.groupBy(F.col("ts").cast("date").alias("day"))
-         .agg(F.count(F.lit(1)).cast(dec).alias("n"),
-              F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).cast(dec).alias("x")))
-    c = d.select(
-        "day", "n", "x",
-        F.sum(F.col("x") * F.lit(_SPRT_LA)
-              + (F.col("n") - F.col("x")) * F.lit(_SPRT_LB))
-        .over(Window.orderBy("day")).alias("llr_e9"))
-    return c.select(
-        "day", F.col("n").cast("long").alias("n_events"),
-        F.col("x").cast("long").alias("n_purchases"),
-        F.col("llr_e9").cast("long").alias("llr_e9"),
-        F.when(F.col("llr_e9") >= _SPRT_UP, "accept_h1")
-        .when(F.col("llr_e9") <= _SPRT_LO, "accept_h0")
-        .otherwise("continue").alias("decision"))
-
-
-_WEIBULL_SQL = """
-WITH lag_t AS (
-  SELECT datediff('day', o.o_orderdate, l.l_shipdate) AS t
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-  WHERE datediff('day', o.o_orderdate, l.l_shipdate) > 0
-), v AS (
-  SELECT CAST(t AS HUGEINT) AS t, CAST(count(*) AS HUGEINT) AS c
-  FROM lag_t GROUP BY 1
-), r AS (
-  SELECT t, sum(c) OVER (ORDER BY t) AS i, sum(c) OVER () AS n FROM v
-), pts AS (
-  SELECT
-    CAST(floor(ln(CAST(t AS DOUBLE)) * 1000000 + 0.5) AS HUGEINT) AS x,
-    CAST(floor(ln(-ln(1.0 - (CAST(i AS DOUBLE) - 0.3)
-                      / (CAST(n AS DOUBLE) + 0.4)))
-               * 1000000 + 0.5) AS HUGEINT) AS y
-  FROM r WHERE i < n
-), s AS (
-  SELECT CAST(count(*) AS HUGEINT) AS k, sum(x) AS sx, sum(y) AS sy,
-         sum(x * x) AS sxx, sum(x * y) AS sxy
-  FROM pts
-)
-SELECT CAST(k AS BIGINT) AS n_points,
-       CAST((k * sxy - sx * sy) * 1000000 // (k * sxx - sx * sx)
-            AS BIGINT) AS shape_e6,
-       CAST((sy * (k * sxx - sx * sx) - sx * (k * sxy - sx * sy))
-            // ((k * sxx - sx * sx) * k) AS BIGINT) AS intercept_e6
-FROM s
-"""
-
-
-@register("q_lineitem_weibull", _WEIBULL_SQL)
-def q_lineitem_weibull(spark, sf_dir):
-    """Weibull median-rank regression on order-to-ship lag — the
-    classical reliability fit: distinct lag days get Bernard's median
-    rank F = (i−0.3)/(n+0.4) at their cumulative count, each point's
-    (ln t, ln(−ln(1−F))) is floored ONCE to e6 from exact integer
-    (i, n, t) by identical expressions in both engines (the JSD/MI float
-    discipline), and the Weibull shape k then falls out of EXACT integer
-    OLS over those e6 points — slope as a cross-multiplied e6 quotient,
-    intercept via the cleared normal equations (scale = exp(−b/k), left
-    in log form). The fully-ranked final point (F = 1) is excluded as
-    standard. Plan: the join is the only data-sized op; the curve
-    collapses to distinct lag days (O(hundreds)) before any window or
-    the 5-sum reduction."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    dec = "decimal(38,0)"
-    lag_t = (li.join(o, li["l_orderkey"] == o["o_orderkey"])
-             .select(F.datediff(F.col("l_shipdate").cast("date"),
-                                F.col("o_orderdate").cast("date"))
-                     .alias("t"))
-             .filter(F.col("t") > 0))
-    v = lag_t.groupBy("t").agg(F.count(F.lit(1)).cast(dec).alias("c"))
-    r = v.select(
-        F.col("t").cast(dec).alias("t"),
-        F.sum("c").over(Window.orderBy("t")).alias("i"),
-        F.sum("c").over(Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("n"))
-    pts = (r.filter(F.col("i") < F.col("n"))
-           .select(
-               F.expr("CAST(floor(ln(CAST(t AS DOUBLE)) * 1000000"
-                      " + 0.5) AS DECIMAL(38,0))").alias("x"),
-               F.expr("CAST(floor(ln(-ln(1.0 - (CAST(i AS DOUBLE) - 0.3)"
-                      " / (CAST(n AS DOUBLE) + 0.4))) * 1000000 + 0.5)"
-                      " AS DECIMAL(38,0))").alias("y")))
-    s = pts.agg(F.count(F.lit(1)).cast(dec).alias("k"),
-                F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-                F.sum(F.col("x") * F.col("x")).alias("sxx"),
-                F.sum(F.col("x") * F.col("y")).alias("sxy"))
-    return s.select(
-        F.col("k").cast("long").alias("n_points"),
-        F.expr("CAST((k * sxy - sx * sy) * 1000000"
-               " div (k * sxx - sx * sx) AS BIGINT)").alias("shape_e6"),
-        F.expr("CAST((sy * (k * sxx - sx * sx) - sx * (k * sxy - sx * sy))"
-               " div ((k * sxx - sx * sx) * k) AS BIGINT)")
-        .alias("intercept_e6"))
-
-
-def _ndcg_weights(k: int = 5):
-    """1/log2(rank+1) DCG discounts as e9 INTEGER literals computed once
-    here and injected into BOTH engines (the SPRT constant discipline) —
-    per-user DCG/IDCG become pure integer dot products."""
-    import math
-    return [math.floor(1e9 / math.log2(r + 1) + 0.5)
-            for r in range(1, k + 1)]
-
-
-_NDCG_W = _ndcg_weights()
-
-_NDCG_SQL = f"""
-WITH h AS (
-  SELECT user_id, event_type,
-         CAST(count(*) FILTER (WHERE day(CAST(ts AS TIMESTAMP)) <= 15)
-              AS HUGEINT) AS score,
-         CAST(count(*) FILTER (WHERE day(CAST(ts AS TIMESTAMP)) > 15)
-              AS HUGEINT) AS gain
-  FROM events GROUP BY 1, 2
-), r AS (
-  SELECT user_id, gain,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY score DESC, event_type) AS pos,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY gain DESC, event_type) AS ipos
-  FROM h
-), w AS (
-  SELECT * FROM (VALUES {", ".join(f"({i + 1}, {w})"
-                                   for i, w in enumerate(_NDCG_W))})
-      t(pos, wt)
-), d AS (
-  SELECT r.user_id,
-         sum(CASE WHEN wp.wt IS NOT NULL THEN r.gain * wp.wt ELSE 0 END)
-             AS dcg_e9,
-         sum(CASE WHEN wi.wt IS NOT NULL THEN r.gain * wi.wt ELSE 0 END)
-             AS idcg_e9
-  FROM r LEFT JOIN w wp ON wp.pos = r.pos
-         LEFT JOIN w wi ON wi.pos = r.ipos
-  GROUP BY 1
-), n AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n_users,
-         CAST(count(*) FILTER (WHERE idcg_e9 > 0) AS HUGEINT) AS n_scored,
-         sum(CASE WHEN idcg_e9 > 0
-             THEN dcg_e9 * 1000000 // idcg_e9 ELSE 0 END) AS s_ndcg_e6
-  FROM d
-)
-SELECT CAST(n_users AS BIGINT) AS n_users,
-       CAST(n_scored AS BIGINT) AS n_scored,
-       CAST(s_ndcg_e6 // n_scored AS BIGINT) AS mean_ndcg_e6
-FROM n
-"""
-
-
-@register("q_events_ndcg", _NDCG_SQL)
-def q_events_ndcg(spark, sf_dir):
-    """NDCG@5 ranking-quality evaluation of a temporal recommender: per
-    user, event types are ranked by first-half-of-month activity
-    (deterministic type tiebreak) and judged against second-half activity
-    as graded relevance. The 1/log2(rank+1) discounts are e9 INTEGER
-    literals injected into both engines, so per-user DCG and the
-    ideal-ordering IDCG are exact integer dot products; each user's
-    NDCG = DCG·10⁶ div IDCG is floored once, users with empty second
-    halves (IDCG = 0) are excluded from the mean by the standard
-    convention, and the corpus mean is one more integer quotient. Plan:
-    one map-side-combinable (user, type) groupBy, two 5-row-per-user rank
-    windows, a broadcast join against the 5-row weight table, one
-    reduction — no data-sized shuffle beyond the first groupBy."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    h = e.groupBy("user_id", "event_type").agg(
-        F.sum(F.when(F.dayofmonth("ts") <= 15, 1).otherwise(0)).cast(dec)
-        .alias("score"),
-        F.sum(F.when(F.dayofmonth("ts") > 15, 1).otherwise(0)).cast(dec)
-        .alias("gain"))
-    wu = Window.partitionBy("user_id")
-    r = h.select(
-        "user_id", "gain",
-        F.row_number().over(wu.orderBy(F.col("score").desc(),
-                                       "event_type")).alias("pos"),
-        F.row_number().over(wu.orderBy(F.col("gain").desc(),
-                                       "event_type")).alias("ipos"))
-    w = spark.createDataFrame(
-        [(i + 1, wt) for i, wt in enumerate(_NDCG_W)], "pos int, wt long")
-    wp = w.select(F.col("pos").alias("wp_pos"), F.col("wt").alias("wp_wt"))
-    wi = w.select(F.col("pos").alias("wi_pos"), F.col("wt").alias("wi_wt"))
-    z = F.lit(0).cast(dec)
-    d = (r.join(F.broadcast(wp), F.col("wp_pos") == F.col("pos"), "left")
-         .join(F.broadcast(wi), F.col("wi_pos") == F.col("ipos"), "left")
-         .groupBy("user_id")
-         .agg(F.sum(F.when(F.col("wp_wt").isNotNull(),
-                           F.col("gain") * F.col("wp_wt")).otherwise(z))
-              .alias("dcg_e9"),
-              F.sum(F.when(F.col("wi_wt").isNotNull(),
-                           F.col("gain") * F.col("wi_wt")).otherwise(z))
-              .alias("idcg_e9")))
-    n = d.agg(
-        F.count(F.lit(1)).cast(dec).alias("n_users"),
-        F.sum(F.when(F.col("idcg_e9") > 0, 1).otherwise(0)).cast(dec)
-        .alias("n_scored"),
-        F.sum(F.when(F.col("idcg_e9") > 0,
-                     F.expr("CAST(dcg_e9 * 1000000 div idcg_e9"
-                            " AS DECIMAL(38,0))")).otherwise(z))
-        .alias("s_ndcg_e6"))
-    return n.select(
-        F.col("n_users").cast("long").alias("n_users"),
-        F.col("n_scored").cast("long").alias("n_scored"),
-        F.expr("CAST(s_ndcg_e6 div n_scored AS BIGINT)")
-        .alias("mean_ndcg_e6"))
-
-
-def _hmm_consts():
-    """2-state HMM log-probabilities as e9 INTEGER literals computed once
-    here and injected into BOTH engines (the SPRT constant discipline):
-    states 0=low / 1=high purchase regime, P(stay)=0.8, P(obs matches
-    state)=0.7, uniform init."""
-    import math
-
-    def L(p):
-        return math.floor(math.log(p) * 1e9 + 0.5)
-
-    return {"E00": L(0.7), "E01": L(0.3), "E10": L(0.3), "E11": L(0.7),
-            "TS": L(0.8), "TX": L(0.2), "LI": L(0.5)}
-
-
-_HMM = _hmm_consts()
-
-_VITERBI_SQL = f"""
-WITH RECURSIVE d0 AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CAST(count(*) FILTER (WHERE event_type = 'purchase') AS HUGEINT)
-             AS x
-  FROM events GROUP BY 1
-), g AS (SELECT sum(x) AS sx, CAST(count(*) AS HUGEINT) AS nd FROM d0),
-d AS (
-  SELECT day, row_number() OVER (ORDER BY day) AS t,
-         CASE WHEN x * (SELECT nd FROM g) > (SELECT sx FROM g)
-              THEN 1 ELSE 0 END AS obs
-  FROM d0
-), f AS (
-  SELECT t, day, obs,
-         CAST({_HMM['LI']} AS BIGINT) + CASE WHEN obs = 1 THEN CAST({_HMM['E01']} AS BIGINT)
-                             ELSE CAST({_HMM['E00']} AS BIGINT) END AS v0,
-         CAST({_HMM['LI']} AS BIGINT) + CASE WHEN obs = 1 THEN CAST({_HMM['E11']} AS BIGINT)
-                             ELSE CAST({_HMM['E10']} AS BIGINT) END AS v1,
-         0 AS p0, 0 AS p1
-  FROM d WHERE t = 1
-  UNION ALL
-  SELECT d.t, d.day, d.obs,
-         CASE WHEN d.obs = 1 THEN CAST({_HMM['E01']} AS BIGINT) ELSE CAST({_HMM['E00']} AS BIGINT) END
-           + greatest(f.v0 + CAST({_HMM['TS']} AS BIGINT), f.v1 + CAST({_HMM['TX']} AS BIGINT)),
-         CASE WHEN d.obs = 1 THEN CAST({_HMM['E11']} AS BIGINT) ELSE CAST({_HMM['E10']} AS BIGINT) END
-           + greatest(f.v0 + CAST({_HMM['TX']} AS BIGINT), f.v1 + CAST({_HMM['TS']} AS BIGINT)),
-         CASE WHEN f.v0 + CAST({_HMM['TS']} AS BIGINT) >= f.v1 + CAST({_HMM['TX']} AS BIGINT)
-              THEN 0 ELSE 1 END,
-         CASE WHEN f.v0 + CAST({_HMM['TX']} AS BIGINT) >= f.v1 + CAST({_HMM['TS']} AS BIGINT)
-              THEN 0 ELSE 1 END
-  FROM f JOIN d ON d.t = f.t + 1
-), back AS (
-  SELECT t, CASE WHEN v0 >= v1 THEN 0 ELSE 1 END AS s
-  FROM f WHERE t = (SELECT max(t) FROM f)
-  UNION ALL
-  SELECT b.t - 1, CASE WHEN b.s = 0 THEN f.p0 ELSE f.p1 END
-  FROM back b JOIN f ON f.t = b.t WHERE b.t > 1
-)
-SELECT f.day, CAST(f.obs AS INTEGER) AS obs,
-       CAST(b.s AS INTEGER) AS map_state,
-       CAST(f.v0 AS BIGINT) AS v0_e9, CAST(f.v1 AS BIGINT) AS v1_e9
-FROM f JOIN back b ON b.t = f.t
-"""
-
-
-@register("q_events_viterbi", _VITERBI_SQL)
-def q_events_viterbi(spark, sf_dir):
-    """Viterbi MAP decoding of a 2-state HMM over the daily purchase
-    regime (obs = day's purchase count above the corpus daily mean,
-    an exact integer cross-multiplication): sticky 0.8/0.2 transitions,
-    0.7/0.3 emissions, uniform init — every log-probability an e9
-    INTEGER literal injected into both engines, so the whole
-    forward-max trellis AND the backtracked state path are pure integer
-    arithmetic with a deterministic prefer-state-0 tiebreak. The oracle
-    runs forward + backtrack as two recursive CTEs; the engine reduces
-    the scan distributively, collects only the calendar-bounded series
-    (≈30 rows — the Holt/BPE bounded-recursion discipline) and
-    re-parallelizes the decoded path. Output: the full trellis scores
-    and the MAP regime per day."""
-    e = _t(spark, sf_dir, "events")
-    d0 = (e.groupBy(F.col("ts").cast("date").alias("day"))
-          .agg(F.sum(F.when(F.col("event_type") == "purchase", 1)
-                     .otherwise(0)).cast("long").alias("x"))
-          .orderBy("day"))
-    rows = d0.collect()
-    nd = len(rows)
-    sx = sum(int(r["x"]) for r in rows)
-    obs = [1 if int(r["x"]) * nd > sx else 0 for r in rows]
-    H = _HMM
-    v0 = H["LI"] + (H["E01"] if obs[0] == 1 else H["E00"])
-    v1 = H["LI"] + (H["E11"] if obs[0] == 1 else H["E10"])
-    trellis = [(v0, v1, 0, 0)]
-    for t in range(1, nd):
-        e0 = H["E01"] if obs[t] == 1 else H["E00"]
-        e1 = H["E11"] if obs[t] == 1 else H["E10"]
-        a0, b0 = v0 + H["TS"], v1 + H["TX"]
-        a1, b1 = v0 + H["TX"], v1 + H["TS"]
-        p0 = 0 if a0 >= b0 else 1
-        p1 = 0 if a1 >= b1 else 1
-        v0, v1 = e0 + max(a0, b0), e1 + max(a1, b1)
-        trellis.append((v0, v1, p0, p1))
-    path = [0] * nd
-    path[-1] = 0 if trellis[-1][0] >= trellis[-1][1] else 1
-    for t in range(nd - 1, 0, -1):
-        path[t - 1] = trellis[t][2] if path[t] == 0 else trellis[t][3]
-    out = [(rows[t]["day"], obs[t], path[t],
-            trellis[t][0], trellis[t][1]) for t in range(nd)]
-    return spark.createDataFrame(
-        out, "day date, obs int, map_state int, v0_e9 long, v1_e9 long")
-
-
-_ABC_XYZ_SQL = """
-WITH wk AS (
-  SELECT l_partkey, (day(CAST(l_shipdate AS TIMESTAMP)) - 1) // 7 AS w,
-         CAST(sum(CAST(l_quantity AS HUGEINT)) AS HUGEINT) AS q,
-         CAST(sum(CAST(floor(l_extendedprice) AS HUGEINT)) AS HUGEINT)
-             AS rev
-  FROM lineitem GROUP BY 1, 2
-), pt AS (
-  SELECT l_partkey, sum(rev) AS rev, sum(q) AS sq, sum(q * q) AS sqq
-  FROM wk GROUP BY 1
-), rk AS (
-  SELECT l_partkey, rev, sq, sqq,
-         sum(rev) OVER (ORDER BY rev DESC, l_partkey) AS cumrev,
-         sum(rev) OVER () AS totrev
-  FROM pt
-), cls AS (
-  SELECT CASE WHEN cumrev * 100 <= totrev * 80 THEN 'A'
-              WHEN cumrev * 100 <= totrev * 95 THEN 'B'
-              ELSE 'C' END AS abc_class,
-         CASE WHEN (5 * sqq - sq * sq) * 4 <= sq * sq THEN 'X'
-              WHEN 5 * sqq - sq * sq <= sq * sq THEN 'Y'
-              ELSE 'Z' END AS xyz_class,
-         rev
-  FROM rk
-)
-SELECT abc_class, xyz_class, CAST(count(*) AS BIGINT) AS n_parts,
-       CAST(sum(rev) AS BIGINT) AS revenue
-FROM cls GROUP BY 1, 2
-"""
-
-
-@register("q_parts_abc_xyz", _ABC_XYZ_SQL)
-def q_parts_abc_xyz(spark, sf_dir):
-    """ABC-XYZ inventory classification matrix: parts are ranked into
-    revenue classes by cumulative share (A ≤ 80%, B ≤ 95%, C — exact
-    cross-multiplied thresholds, never a percentage float) and crossed
-    with demand-variability classes from the CV² of their 5 weekly
-    shipped-quantity buckets — CV² = (W·Σq² − (Σq)²)/(Σq)² is an exact
-    integer comparison against the CV ≤ 0.5 / ≤ 1.0 boundaries (×4 / ×1
-    cross-multiplications), weeks without demand counting as zeros via
-    the constant W = 5. Output: the 9-cell planning matrix with part
-    counts and revenue. Plan: one map-side-combinable (part, week)
-    groupBy, a per-part rollup, ONE ordered window over the part
-    dimension for the Pareto rank, then a 9-row reduction."""
-    li = _t(spark, sf_dir, "lineitem")
-    dec = "decimal(38,0)"
-    wk = (li.groupBy(
-            "l_partkey",
-            F.expr("(day(CAST(l_shipdate AS TIMESTAMP)) - 1) div 7")
-            .alias("w"))
-          .agg(F.sum(F.col("l_quantity").cast(dec)).alias("q"),
-               F.sum(F.floor(F.col("l_extendedprice"))).cast(dec)
-               .alias("rev")))
-    pt = wk.groupBy("l_partkey").agg(
-        F.sum("rev").alias("rev"), F.sum("q").alias("sq"),
-        F.sum(F.col("q") * F.col("q")).alias("sqq"))
-    rk = pt.select(
-        "l_partkey", "rev", "sq", "sqq",
-        F.sum("rev").over(Window.orderBy(F.col("rev").desc(), "l_partkey"))
-        .alias("cumrev"),
-        F.sum("rev").over(Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("totrev"))
-    cls = rk.select(
-        F.when(F.col("cumrev") * 100 <= F.col("totrev") * 80, "A")
-        .when(F.col("cumrev") * 100 <= F.col("totrev") * 95, "B")
-        .otherwise("C").alias("abc_class"),
-        F.when((F.lit(5) * F.col("sqq") - F.col("sq") * F.col("sq")) * 4
-               <= F.col("sq") * F.col("sq"), "X")
-        .when(F.lit(5) * F.col("sqq") - F.col("sq") * F.col("sq")
-              <= F.col("sq") * F.col("sq"), "Y")
-        .otherwise("Z").alias("xyz_class"),
-        "rev")
-    return (cls.groupBy("abc_class", "xyz_class")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_parts"),
-                 F.sum("rev").cast("long").alias("revenue")))
-
-
-_TURNING_SQL = """
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS HUGEINT) AS x
-  FROM events GROUP BY 1
-), s AS (
-  SELECT x, lag(x) OVER (ORDER BY day) AS xp,
-         lead(x) OVER (ORDER BY day) AS xn
-  FROM d
-), a AS (
-  SELECT CAST((SELECT count(*) FROM d) AS HUGEINT) AS n,
-         CAST(count(*) FILTER (WHERE (xp < x AND x > xn)
-                                  OR (xp > x AND x < xn)) AS HUGEINT) AS tp
-  FROM s WHERE xp IS NOT NULL AND xn IS NOT NULL
-)
-SELECT CAST(n AS BIGINT) AS n_days, CAST(tp AS BIGINT) AS n_turning,
-       CAST(2 * (n - 2) * 1000000 // 3 AS BIGINT) AS expected_e6,
-       CAST((3 * tp - 2 * (n - 2)) * (3 * tp - 2 * (n - 2)) * 10000000
-            // (16 * n - 29) AS BIGINT) AS z2_e6
-FROM a
-"""
-
-
-@register("q_events_turning_points", _TURNING_SQL)
-def q_events_turning_points(spark, sf_dir):
-    """Kendall's turning-point test for randomness of the daily-volume
-    series: count strict local peaks and troughs, compare against the
-    i.i.d. expectation 2(n−2)/3 with variance (16n−29)/90 — the
-    fraction-cleared z² = (3T − 2(n−2))²·10/(16n−29) lands as an exact
-    e6 integer quotient (ties in neighboring days break no turning
-    point, the strict-inequality convention). Plan: one map-side-
-    combinable daily groupBy, one lag/lead window over O(calendar)
-    rows, one 2-cell reduction."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d = (e.groupBy(F.col("ts").cast("date").alias("day"))
-         .agg(F.count(F.lit(1)).cast(dec).alias("x")))
-    w = Window.orderBy("day")
-    s = d.select("x", F.lag("x").over(w).alias("xp"),
-                 F.lead("x").over(w).alias("xn"))
-    n = d.agg(F.count(F.lit(1)).cast(dec).alias("n"))
-    a = (s.filter(F.col("xp").isNotNull() & F.col("xn").isNotNull())
-         .agg(F.sum(F.when(((F.col("xp") < F.col("x"))
-                            & (F.col("x") > F.col("xn")))
-                           | ((F.col("xp") > F.col("x"))
-                              & (F.col("x") < F.col("xn"))), 1)
-                    .otherwise(0)).cast(dec).alias("tp"))
-         .crossJoin(F.broadcast(n)))
-    return a.select(
-        F.col("n").cast("long").alias("n_days"),
-        F.col("tp").cast("long").alias("n_turning"),
-        F.expr("CAST(2 * (n - 2) * 1000000 div 3 AS BIGINT)")
-        .alias("expected_e6"),
-        F.expr("CAST((3 * tp - 2 * (n - 2)) * (3 * tp - 2 * (n - 2))"
-               " * 10000000 div (16 * n - 29) AS BIGINT)").alias("z2_e6"))
-
-
-_MH_SQL = """
-WITH u AS (
-  SELECT user_id, CAST(hour(ts) // 6 AS INTEGER) AS stratum,
-         max(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS exp,
-         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS outc
-  FROM events GROUP BY 1, 2
-), s AS (
-  SELECT stratum,
-         CAST(count(*) FILTER (WHERE exp = 1 AND outc = 1) AS HUGEINT) AS a,
-         CAST(count(*) FILTER (WHERE exp = 1 AND outc = 0) AS HUGEINT) AS b,
-         CAST(count(*) FILTER (WHERE exp = 0 AND outc = 1) AS HUGEINT) AS c,
-         CAST(count(*) FILTER (WHERE exp = 0 AND outc = 0) AS HUGEINT) AS d,
-         CAST(count(*) AS HUGEINT) AS n
-  FROM u GROUP BY 1
-), t AS (
-  SELECT sum(a * d * 1000000000 // n) AS num_e9,
-         sum(b * c * 1000000000 // n) AS den_e9,
-         CAST(count(*) AS HUGEINT) AS k
-  FROM s
-)
-SELECT CAST(k AS BIGINT) AS n_strata, CAST(num_e9 AS BIGINT) AS num_e9,
-       CAST(den_e9 AS BIGINT) AS den_e9,
-       CAST(CASE WHEN den_e9 = 0 THEN -1
-            ELSE num_e9 * 1000000 // den_e9 END AS BIGINT) AS or_mh_e6
-FROM t
-"""
-
-
-@register("q_events_mantel_haenszel", _MH_SQL)
-def q_events_mantel_haenszel(spark, sf_dir):
-    """Mantel-Haenszel pooled odds ratio across day-part strata: within
-    each (user, day-part) cell, exposure = viewed anything, outcome =
-    purchased anything; the four 2×2 tables are pooled by the MH
-    estimator Σ(a_i·d_i/n_i) / Σ(b_i·c_i/n_i) — the confounder-adjusted
-    association every stratified A/B readout needs. Each stratum term is
-    floored ONCE to e9 from exact integer cell counts (identical
-    expression both engines), the ratio once more to e6 (−1 sentinel
-    when the denominator vanishes). Plan: one map-side-combinable
-    groupBy(user, stratum) of two boolean maxes, a 4-row stratum
-    aggregate, a 3-cell reduction."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    u = e.groupBy("user_id",
-                  F.expr("CAST(hour(ts) div 6 AS INT)").alias("stratum")) \
-        .agg(F.max(F.when(F.col("event_type") == "view", 1).otherwise(0))
-             .alias("exp"),
-             F.max(F.when(F.col("event_type") == "purchase", 1)
-                   .otherwise(0)).alias("outc"))
-    s = u.groupBy("stratum").agg(
-        F.sum(F.when((F.col("exp") == 1) & (F.col("outc") == 1), 1)
-              .otherwise(0)).cast(dec).alias("a"),
-        F.sum(F.when((F.col("exp") == 1) & (F.col("outc") == 0), 1)
-              .otherwise(0)).cast(dec).alias("b"),
-        F.sum(F.when((F.col("exp") == 0) & (F.col("outc") == 1), 1)
-              .otherwise(0)).cast(dec).alias("c"),
-        F.sum(F.when((F.col("exp") == 0) & (F.col("outc") == 0), 1)
-              .otherwise(0)).cast(dec).alias("d"),
-        F.count(F.lit(1)).cast(dec).alias("n"))
-    t = s.agg(
-        F.sum(F.expr("CAST(a * d * 1000000000 div n AS DECIMAL(38,0))"))
-        .alias("num_e9"),
-        F.sum(F.expr("CAST(b * c * 1000000000 div n AS DECIMAL(38,0))"))
-        .alias("den_e9"),
-        F.count(F.lit(1)).cast(dec).alias("k"))
-    return t.select(
-        F.col("k").cast("long").alias("n_strata"),
-        F.col("num_e9").cast("long").alias("num_e9"),
-        F.col("den_e9").cast("long").alias("den_e9"),
-        F.expr("CAST(CASE WHEN den_e9 = 0 THEN -1"
-               " ELSE num_e9 * 1000000 div den_e9 END AS BIGINT)")
-        .alias("or_mh_e6"))
-
-
-_LJUNG_BOX_SQL = """
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS HUGEINT) AS x
-  FROM events GROUP BY 1
-), g AS (SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS s FROM d),
-u AS (
-  SELECT row_number() OVER (ORDER BY day) AS t,
-         (SELECT n FROM g) * x - (SELECT s FROM g) AS u
-  FROM d
-), u0 AS (SELECT sum(u * u) AS uu FROM u),
-lags AS (SELECT unnest(range(1, 8)) AS lag),
-ak AS (
-  SELECT l.lag, sum(a.u * b.u) AS alag
-  FROM lags l JOIN u a ON TRUE JOIN u b ON b.t = a.t + l.lag
-  GROUP BY 1
-), terms AS (
-  SELECT lag, alag,
-         CAST(CASE WHEN alag >= 0 THEN 1 ELSE -1 END
-              * (alag * alag * 1000000 // ((SELECT uu FROM u0)
-                                           * (SELECT uu FROM u0)))
-              AS BIGINT) AS r2_signed_e6,
-         alag * alag * 1000000
-           // ((SELECT uu FROM u0) * (SELECT uu FROM u0)
-               * ((SELECT n FROM g) - lag)) AS term_e6
-  FROM ak
-)
-SELECT CAST(lag AS BIGINT) AS lag, r2_signed_e6,
-       CAST((SELECT n FROM g) * ((SELECT n FROM g) + 2)
-            * sum(term_e6) OVER (ORDER BY lag) AS BIGINT) AS q_lb_e6
-FROM terms
-"""
-
-
-@register("q_events_ljung_box", _LJUNG_BOX_SQL)
-def q_events_ljung_box(spark, sf_dir):
-    """Ljung-Box portmanteau test on the daily-volume series, lags 1..7:
-    autocorrelations stay EXACT by clearing the mean — u_t = n·x_t − Σx
-    makes r_k = Σu_t·u_{t+k} / Σu_t² a pure integer ratio; each lag
-    contributes r_k²/(n−k) floored ONCE to e6 from those integers, and
-    the running Q = n(n+2)·Σ terms accumulates per lag (the weekly-lag
-    window any seasonality check reads). r_k² carries the sign of r_k so
-    the direction survives squaring. Plan: one map-side-combinable daily
-    groupBy, a 7×O(calendar) self-join on row offsets, everything past
-    the scan is O(lags × calendar)."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d = (e.groupBy(F.col("ts").cast("date").alias("day"))
-         .agg(F.count(F.lit(1)).cast(dec).alias("x")))
-    g = d.agg(F.count(F.lit(1)).cast(dec).alias("n"),
-              F.sum("x").alias("s"))
-    u = (d.crossJoin(F.broadcast(g))
-         .select(F.row_number().over(Window.orderBy("day")).cast(dec)
-                 .alias("t"),
-                 (F.col("n") * F.col("x") - F.col("s")).alias("u"),
-                 "n"))
-    u0 = u.agg(F.sum(F.col("u") * F.col("u")).alias("uu"))
-    lags = spark.range(1, 8).select(F.col("id").cast(dec).alias("lag"))
-    a = u.select(F.col("t").alias("ta"), F.col("u").alias("ua"), "n")
-    b = u.select(F.col("t").alias("tb"), F.col("u").alias("ub"))
-    ak = (lags.crossJoin(a)
-          .join(b, F.col("tb") == F.col("ta") + F.col("lag"))
-          .groupBy("lag")
-          .agg(F.sum(F.col("ua") * F.col("ub")).alias("alag"),
-               F.max("n").alias("n")))
-    terms = (ak.crossJoin(F.broadcast(u0))
-             .select(
-                 "lag", "n",
-                 F.expr("CAST(CASE WHEN alag >= 0 THEN 1 ELSE -1 END"
-                        " * (alag * alag * 1000000 div (uu * uu))"
-                        " AS BIGINT)").alias("r2_signed_e6"),
-                 F.expr("CAST(alag * alag * 1000000"
-                        " div (uu * uu * (n - lag)) AS DECIMAL(38,0))")
-                 .alias("term_e6")))
-    return terms.select(
-        F.col("lag").cast("long").alias("lag"),
-        "r2_signed_e6",
-        F.expr("CAST(n * (n + 2) * CAST(sum(term_e6) OVER (ORDER BY lag)"
-               " AS DECIMAL(38,0)) AS BIGINT)").alias("q_lb_e6"))
-
-
-_ECE_SQL = """
-WITH u AS (
-  SELECT user_id,
-         CAST(count(*) FILTER (WHERE day(CAST(ts AS TIMESTAMP)) <= 15)
-              AS HUGEINT) AS n1,
-         CAST(count(*) FILTER (WHERE day(CAST(ts AS TIMESTAMP)) <= 15
-                                 AND event_type = 'purchase') AS HUGEINT)
-             AS x1,
-         max(CASE WHEN day(CAST(ts AS TIMESTAMP)) > 15
-                   AND event_type = 'purchase' THEN 1 ELSE 0 END) AS y
-  FROM events GROUP BY 1
-), p AS (
-  SELECT y, CAST(CASE WHEN n1 = 0 THEN 0
-                 ELSE x1 * 1000000 // n1 END AS HUGEINT) AS p_e6
-  FROM u
-), b AS (
-  SELECT least(p_e6 // 100000, 9) AS bin,
-         CAST(count(*) AS HUGEINT) AS n_b,
-         sum(p_e6) AS sp, CAST(sum(y) AS HUGEINT) AS sy
-  FROM p GROUP BY 1
-), t AS (SELECT sum(n_b) AS n FROM b)
-SELECT CAST(bin AS BIGINT) AS bin, CAST(n_b AS BIGINT) AS n_users,
-       CAST(sp // n_b AS BIGINT) AS mean_conf_e6,
-       CAST(sy * 1000000 // n_b AS BIGINT) AS frac_pos_e6,
-       CAST(sum(abs(sy * 1000000 - sp)) OVER () // (SELECT n FROM t)
-            AS BIGINT) AS ece_e6
-FROM b
-"""
-
-
-@register("q_events_reliability_ece", _ECE_SQL)
-def q_events_reliability_ece(spark, sf_dir):
-    """Reliability diagram + expected calibration error for a
-    probabilistic forecaster: each user's first-half purchase rate
-    (floored ONCE to e6) predicts whether they purchase in the second
-    half; ten confidence bins report mean confidence vs observed
-    frequency, and ECE = Σ_b |Σy·10⁶ − Σp_e6| / N rides along on every
-    row — because the per-bin gap uses the SUMS, not the means, it is
-    exact integer arithmetic throughout (|n_b·acc − n_b·conf| with the
-    n_b cancelled). The calibration diagnostic that belongs next to
-    q_events_brier_score's single number. Plan: one map-side-combinable
-    user aggregate, a 10-row bin aggregate, one window over those 10
-    rows."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    u = e.groupBy("user_id").agg(
-        F.sum(F.when(F.dayofmonth("ts") <= 15, 1).otherwise(0)).cast(dec)
-        .alias("n1"),
-        F.sum(F.when((F.dayofmonth("ts") <= 15)
-                     & (F.col("event_type") == "purchase"), 1)
-              .otherwise(0)).cast(dec).alias("x1"),
-        F.max(F.when((F.dayofmonth("ts") > 15)
-                     & (F.col("event_type") == "purchase"), 1)
-              .otherwise(0)).alias("y"))
-    p = u.select(
-        "y",
-        F.expr("CAST(CASE WHEN n1 = 0 THEN 0"
-               " ELSE x1 * 1000000 div n1 END AS DECIMAL(38,0))")
-        .alias("p_e6"))
-    b = p.groupBy(F.least(F.expr("p_e6 div 100000"), F.lit(9)).alias("bin")) \
-        .agg(F.count(F.lit(1)).cast(dec).alias("n_b"),
-             F.sum("p_e6").alias("sp"),
-             F.sum("y").cast(dec).alias("sy"))
-    t = b.agg(F.sum("n_b").alias("n"))
-    w = Window.rowsBetween(Window.unboundedPreceding,
-                           Window.unboundedFollowing)
-    return (b.crossJoin(F.broadcast(t))
-            .withColumn("gap_total",
-                        F.sum(F.abs(F.col("sy") * 1000000 - F.col("sp")))
-                        .over(w))
-            .select(
-                F.col("bin").cast("long").alias("bin"),
-                F.col("n_b").cast("long").alias("n_users"),
-                F.expr("CAST(sp div n_b AS BIGINT)").alias("mean_conf_e6"),
-                F.expr("CAST(sy * 1000000 div n_b AS BIGINT)")
-                .alias("frac_pos_e6"),
-                F.expr("CAST(gap_total div n AS BIGINT)").alias("ece_e6")))
-
-
-def _wl_sql(n_rounds: int = 3, min_cooc: int = 330) -> str:
-    """1-WL oracle: identical degree seeding, identical sorted-neighbor
-    multiset strings, identical md5-prefix recoloring, unrolled one CTE
-    per round."""
-    head = f"""
-WITH m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= {min_cooc}
-), bd AS MATERIALIZED (
-  SELECT a AS node, b AS nbr FROM e UNION ALL SELECT b, a FROM e
-), c0 AS (
-  SELECT node, 'd' || CAST(count(*) AS VARCHAR) AS c
-  FROM bd GROUP BY node)"""
-    steps = []
-    for i in range(1, n_rounds + 1):
-        p = f"c{i - 1}"
-        steps.append(f""",
-c{i} AS MATERIALIZED (
-  SELECT s.node,
-         substr(md5(s.c || '|' || array_to_string(
-             list(nc.c ORDER BY nc.c), ',')), 1, 8) AS c
-  FROM {p} s JOIN bd ON bd.node = s.node
-  JOIN {p} nc ON nc.node = bd.nbr
-  GROUP BY s.node, s.c
-)""")
-    return (head + "".join(steps) + f"""
-SELECT node, c AS wl_color,
-       CAST(count(*) OVER (PARTITION BY c) AS BIGINT) AS class_size
-FROM c{n_rounds}""")
-
-
-@register("kg_wl_refinement_docs", _wl_sql())
-def kg_wl_refinement_docs(spark, sf_dir):
-    """Weisfeiler-Lehman (1-WL) color refinement on the sparsified term
-    co-occurrence graph — the canonical structural-role hash behind
-    graph-isomorphism tests and WL graph kernels: colors seed with
-    degree, then each round rehashes (own color, SORTED multiset of
-    neighbor colors) through an md5 prefix, so two nodes share a color
-    after round k iff the deterministic 1-WL test cannot distinguish
-    their k-hop neighborhoods. Both engines hash identical strings —
-    value-identical colors, not just isomorphic partitions. Plan: k
-    rounds of (edges ⋈ colors → sort-agg → rehash) on the
-    vocabulary-projected graph; at 10⁹ edges each round is one shuffle
-    keyed by node, the same shape as a PageRank step."""
-    edges = _cooc_edges(spark, sf_dir, 330)
-    bd = (edges.select(F.col("term_a").alias("node"),
-                       F.col("term_b").alias("nbr"))
-          .unionAll(edges.select(F.col("term_b").alias("node"),
-                                 F.col("term_a").alias("nbr"))))
-    colors = (bd.groupBy("node")
-              .agg(F.concat(F.lit("d"), F.count(F.lit(1)).cast("string"))
-                   .alias("c")))
-    for _ in range(3):
-        nc = colors.select(F.col("node").alias("nbr"),
-                           F.col("c").alias("nbr_c"))
-        colors = (bd.join(colors, "node").join(nc, "nbr")
-                  .groupBy("node", "c")
-                  .agg(F.array_join(F.array_sort(F.collect_list("nbr_c")),
-                                    ",").alias("ms"))
-                  .select("node",
-                          F.substring(F.md5(F.concat(F.col("c"), F.lit("|"),
-                                                     F.col("ms"))), 1, 8)
-                          .alias("c")))
-    return colors.select(
-        "node", F.col("c").alias("wl_color"),
-        F.count(F.lit(1)).over(Window.partitionBy("c")).cast("long")
-        .alias("class_size"))
-
-
-_GRANGER_EXPR = (
-    "CAST(floor((((CAST(czz AS DOUBLE) * CAST(c11 AS DOUBLE)"
-    " - CAST(c1z AS DOUBLE) * CAST(c1z AS DOUBLE))"
-    " / (CAST(k AS DOUBLE) * CAST(c11 AS DOUBLE))"
-    " - (CAST(czz AS DOUBLE) * CAST(dd AS DOUBLE)"
-    "    - CAST(c1z AS DOUBLE) * CAST(nu1 AS DOUBLE)"
-    "    - CAST(c2z AS DOUBLE) * CAST(nu2 AS DOUBLE))"
-    " / (CAST(k AS DOUBLE) * CAST(dd AS DOUBLE)))"
-    " * (CAST(k AS DOUBLE) - 3.0)"
-    " / ((CAST(czz AS DOUBLE) * CAST(dd AS DOUBLE)"
-    "    - CAST(c1z AS DOUBLE) * CAST(nu1 AS DOUBLE)"
-    "    - CAST(c2z AS DOUBLE) * CAST(nu2 AS DOUBLE))"
-    " / (CAST(k AS DOUBLE) * CAST(dd AS DOUBLE))))"
-    " * 1000000 + 0.5) AS BIGINT)")
-
-_GRANGER_SQL = f"""
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CAST(count(*) FILTER (WHERE event_type = 'purchase') AS HUGEINT)
-             AS y,
-         CAST(count(*) FILTER (WHERE event_type <> 'purchase') AS HUGEINT)
-             AS x
-  FROM events GROUP BY 1
-), l AS (
-  SELECT y AS z, lag(y) OVER (ORDER BY day) AS f1,
-         lag(x) OVER (ORDER BY day) AS f2
-  FROM d
-), p AS (SELECT z, f1, f2 FROM l WHERE f1 IS NOT NULL),
-s AS (
-  SELECT CAST(count(*) AS HUGEINT) AS k, sum(f1) AS sf1, sum(f2) AS sf2,
-         sum(z) AS sz, sum(f1 * f1) AS sf11, sum(f2 * f2) AS sf22,
-         sum(f1 * f2) AS sf12, sum(f1 * z) AS sf1z, sum(f2 * z) AS sf2z,
-         sum(z * z) AS szz
-  FROM p
-), c AS (
-  SELECT k, k * sf11 - sf1 * sf1 AS c11, k * sf22 - sf2 * sf2 AS c22,
-         k * sf12 - sf1 * sf2 AS c12, k * sf1z - sf1 * sz AS c1z,
-         k * sf2z - sf2 * sz AS c2z, k * szz - sz * sz AS czz
-  FROM s
-), g AS (
-  SELECT k, c11, c1z, c2z, czz,
-         c11 * c22 - c12 * c12 AS dd,
-         c1z * c22 - c2z * c12 AS nu1,
-         c2z * c11 - c1z * c12 AS nu2
-  FROM c
-)
-SELECT CAST(k AS BIGINT) AS n_points,
-       {_GRANGER_EXPR} AS f_granger_e6,
-       CAST((c1z * nu1 + c2z * nu2) * 1000000 // (czz * dd) AS BIGINT)
-           AS r2_unrestricted_e6
-FROM g
-"""
-
-
-@register("q_events_granger", _GRANGER_SQL)
-def q_events_granger(spark, sf_dir):
-    """Granger causality test on the daily series — does yesterday's
-    non-purchase activity improve today's purchase forecast beyond
-    yesterday's purchases? Restricted AR(1) vs the unrestricted
-    two-lag model, both solved by the cleared normal equations
-    (q_lineitem_ols2's exact Cramer sums); the F statistic
-    (SSE_r − SSE_u)(k−3)/SSE_u is evaluated as ONE identical double
-    expression over those exact integer sums in both engines (the JSD/MI
-    float discipline — IEEE ops on identical inputs), floored once to
-    e6; the unrestricted R² stays a pure integer quotient. Plan: one
-    map-side-combinable daily groupBy, one lag window and a 10-sum
-    reduction over O(calendar) rows."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d = (e.groupBy(F.col("ts").cast("date").alias("day"))
-         .agg(F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).cast(dec).alias("y"),
-              F.sum(F.when(F.col("event_type") != "purchase", 1)
-                    .otherwise(0)).cast(dec).alias("x")))
-    w = Window.orderBy("day")
-    l = d.select(F.col("y").alias("z"),
-                 F.lag("y").over(w).alias("f1"),
-                 F.lag("x").over(w).alias("f2"))
-    p = l.filter(F.col("f1").isNotNull())
-    s = p.agg(F.count(F.lit(1)).cast(dec).alias("k"),
-              F.sum("f1").alias("sf1"), F.sum("f2").alias("sf2"),
-              F.sum("z").alias("sz"),
-              F.sum(F.col("f1") * F.col("f1")).alias("sf11"),
-              F.sum(F.col("f2") * F.col("f2")).alias("sf22"),
-              F.sum(F.col("f1") * F.col("f2")).alias("sf12"),
-              F.sum(F.col("f1") * F.col("z")).alias("sf1z"),
-              F.sum(F.col("f2") * F.col("z")).alias("sf2z"),
-              F.sum(F.col("z") * F.col("z")).alias("szz"))
-    c = s.select(
-        "k",
-        F.expr("k * sf11 - sf1 * sf1").alias("c11"),
-        F.expr("k * sf22 - sf2 * sf2").alias("c22"),
-        F.expr("k * sf12 - sf1 * sf2").alias("c12"),
-        F.expr("k * sf1z - sf1 * sz").alias("c1z"),
-        F.expr("k * sf2z - sf2 * sz").alias("c2z"),
-        F.expr("k * szz - sz * sz").alias("czz"))
-    g = c.select(
-        "k", "c11", "c1z", "c2z", "czz",
-        F.expr("c11 * c22 - c12 * c12").alias("dd"),
-        F.expr("c1z * c22 - c2z * c12").alias("nu1"),
-        F.expr("c2z * c11 - c1z * c12").alias("nu2"))
-    return g.select(
-        F.col("k").cast("long").alias("n_points"),
-        F.expr(_GRANGER_EXPR).alias("f_granger_e6"),
-        F.expr("CAST((c1z * nu1 + c2z * nu2) * 1000000 div (czz * dd)"
-               " AS BIGINT)").alias("r2_unrestricted_e6"))
-
-
-_MEAN_EXCESS_SQL = """
-WITH y AS (
-  SELECT CAST(floor("value" * 100 + 0.5) AS HUGEINT) AS y FROM events
-), v AS (
-  SELECT y, CAST(count(*) AS HUGEINT) AS c FROM y GROUP BY 1
-), cum AS (
-  SELECT y, c, sum(c) OVER (ORDER BY y) AS cum, sum(c) OVER () AS n FROM v
-), q AS (SELECT unnest(range(1, 10)) AS decile),
-thr AS (
-  SELECT q.decile, min(cum.y) AS u
-  FROM q JOIN cum ON 10 * cum.cum >= q.decile * cum.n
-  GROUP BY 1
-), ex AS (
-  SELECT t.decile, t.u,
-         CAST(sum(v.c) AS HUGEINT) AS n_exceed,
-         sum(v.c * (v.y - t.u)) AS excess
-  FROM thr t JOIN v ON v.y > t.u
-  GROUP BY 1, 2
-)
-SELECT CAST(decile AS BIGINT) AS decile, CAST(u AS BIGINT) AS threshold_e2,
-       CAST(n_exceed AS BIGINT) AS n_exceed,
-       CAST(excess * 1000000 // n_exceed AS BIGINT) AS mean_excess_e2e6
-FROM ex
-"""
-
-
-@register("q_events_mean_excess", _MEAN_EXCESS_SQL)
-def q_events_mean_excess(spark, sf_dir):
-    """Mean-excess (mean residual life) table — the extreme-value-theory
-    diagnostic that picks the peaks-over-threshold cutoff: at each decile
-    threshold of the e2 value distribution (lower-quantile rule,
-    10·cum ≥ d·n on the distinct-value cumulative table), the average
-    exceedance E[Y−u | Y>u] as an exact integer e6 quotient of e2 units
-    (a linear-in-u tail here signals the generalized-Pareto regime).
-    Plan: one map-side-combinable distinct-value groupBy, one cumulative
-    window over value cardinality, a 9-threshold broadcast join back
-    onto that same distinct-value table — never the raw rows."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    v = (e.select(F.floor(F.col("value") * 100 + F.lit(0.5)).cast(dec)
-                  .alias("y"))
-         .groupBy("y").agg(F.count(F.lit(1)).cast(dec).alias("c")))
-    cum = v.select(
-        "y", "c", F.sum("c").over(Window.orderBy("y")).alias("cum"),
-        F.sum("c").over(Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("n"))
-    q = spark.range(1, 10).select(F.col("id").cast(dec).alias("decile"))
-    thr = (q.join(cum, 10 * F.col("cum") >= F.col("decile") * F.col("n"))
-           .groupBy("decile").agg(F.min("y").alias("u")))
-    ex = (F.broadcast(thr).join(v, v["y"] > F.col("u"))
-          .groupBy("decile", "u")
-          .agg(F.sum("c").alias("n_exceed"),
-               F.sum(F.col("c") * (F.col("y") - F.col("u")))
-               .alias("excess")))
-    return ex.select(
-        F.col("decile").cast("long").alias("decile"),
-        F.col("u").cast("long").alias("threshold_e2"),
-        F.col("n_exceed").cast("long").alias("n_exceed"),
-        F.expr("CAST(excess * 1000000 div n_exceed AS BIGINT)")
-        .alias("mean_excess_e2e6"))
-
-
-def _bmp_rle_fixture_sql(n: int = 24, seed: int = 42) -> str:
-    """Oracle for the REAL RLE8 BMP decode path: indices and palette are
-    pure formulas of (x, y, id) (sources/multimodal.synthetic_bmp_rle_media),
-    so expected channel means are recomputed here in plain Python with no
-    BMP bytes — a wrong run count, absolute-mode pad, EOL placement or
-    palette-quad order flips the hash."""
-    rows = []
-    for i in range(n):
-        w = 17 + (i * 3 + seed) % 14
-        h = 9 + (i * 5 + seed) % 10
-        rs = gs = bs = 0
-        for y in range(h):
-            for x in range(w):
-                j = (((y // 2) * 31 + i) % 256 if (x + y + i) % 7 < 5
-                     else (x * 11 + y * 3 + i * 5) % 256)
-                rs += (j * 7) % 256
-                gs += (j * 29) % 256
-                bs += (j * 13) % 256
-        npx = w * h
-        rows.append(f"({i}, {w}, {h}, {rs / npx!r}, {gs / npx!r},"
-                    f" {bs / npx!r})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(r_mean AS DOUBLE) AS r_mean,"
-            f" CAST(g_mean AS DOUBLE) AS g_mean,"
-            f" CAST(b_mean AS DOUBLE) AS b_mean"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, r_mean, g_mean, b_mean)")
-
-
-@register("multimodal_bmp_rle_features", _bmp_rle_fixture_sql())
-def multimodal_bmp_rle_features(spark, sf_dir):
-    """REAL BI_RLE8 compressed BMP decode end to end inside mapInPandas:
-    encoded runs, absolute-mode literals with word padding, EOL/EOB
-    escapes, bottom-up rows, BGRX palette lookup
-    (sources/multimodal._decode_bmp_rle8) — the compressed sibling of
-    the uncompressed 24bpp BMP path, stdlib + numpy only."""
-    from .sources.multimodal import (
-        extract_image_features_real,
-        synthetic_bmp_rle_media,
-    )
-    return extract_image_features_real(synthetic_bmp_rle_media(spark, 24)) \
-        .select("media_id", "width", "height",
-                "r_mean", "g_mean", "b_mean")
-
-
-def _goertzel_fixture_sql(n: int = 48, seed: int = 42) -> str:
-    """Oracle for the Goertzel tone-detection path: the WAV fixture's
-    tones are pure formulas of (id, t), so the expected peak bin/power
-    are recomputed here with a LOCAL copy of the recurrence and no WAV
-    bytes — same strictly-sequential float64 stream, same libm, so the
-    doubles are bit-identical; what the query tests is the RIFF decode +
-    scan wiring."""
-    import math
-
-    import numpy as np
-    rows = []
-    for i in range(1, n, 3):                       # audio rows of the fixture
-        rate = 8000
-        ns = 400 + (i % 5) * 80
-        freq = 200.0 + (i * 37 + seed) % 600
-        # the fixture's exact numpy synthesis (np.sin can differ from
-        # math.sin by an ulp, which moves the peak power's last bits)
-        t = np.arange(ns)
-        x = [int(v) for v in
-             (np.sin(2 * np.pi * freq * t / rate) * 12000).astype("<i2")]
-        best_k, best_p = 0, -1.0
-        for k in range(1, ns // 2):
-            coef = 2.0 * math.cos(2.0 * math.pi * k / ns)
-            s1 = s2 = 0.0
-            for v in x:
-                s0 = float(v) + coef * s1 - s2
-                s2, s1 = s1, s0
-            p = s1 * s1 + s2 * s2 - coef * s1 * s2
-            if p > best_p:
-                best_k, best_p = k, p
-        # the power literal has more significant digits than 2^53 admits
-        # through DuckDB's DECIMAL parse → quote it so strtod parses the
-        # shortest repr straight to the exact double
-        rows.append(f"({i}, {ns}, {best_k}, '{best_k * rate / ns!r}',"
-                    f" '{best_p!r}')")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(n_samples AS BIGINT) AS n_samples,"
-            f" CAST(peak_bin AS BIGINT) AS peak_bin,"
-            f" CAST(peak_freq_hz AS DOUBLE) AS peak_freq_hz,"
-            f" CAST(peak_power AS DOUBLE) AS peak_power"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, n_samples, peak_bin, peak_freq_hz, peak_power)")
-
-
-@register("multimodal_goertzel_features", _goertzel_fixture_sql())
-def multimodal_goertzel_features(spark, sf_dir):
-    """Dominant-tone detection over the real WAV fixture via an
-    exhaustive Goertzel bin scan (sources/multimodal.goertzel_peak) —
-    single-bin DFT power through the classic recurrence, no FFT
-    butterfly reordering, so the float stream is strictly sequential and
-    the detected peak is deterministic. DSP feature extraction as a
-    first-class multimodal column op."""
-    from .sources.multimodal import (
-        extract_goertzel_features,
-        synthetic_bmp_media,
-    )
-    return extract_goertzel_features(synthetic_bmp_media(spark, 48))
-
-
-_MCC_SQL = """
-WITH r AS (
-  SELECT CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END AS r1,
-         CASE WHEN strpos(text, 'spark') > 0 THEN 1 ELSE 0 END AS r2
-  FROM documents
-), c AS (
-  SELECT CAST(count(*) FILTER (WHERE r1 = 1 AND r2 = 1) AS HUGEINT) AS a,
-         CAST(count(*) FILTER (WHERE r1 = 1 AND r2 = 0) AS HUGEINT) AS b,
-         CAST(count(*) FILTER (WHERE r1 = 0 AND r2 = 1) AS HUGEINT) AS c,
-         CAST(count(*) FILTER (WHERE r1 = 0 AND r2 = 0) AS HUGEINT) AS d
-  FROM r
-)
-SELECT CAST(a AS BIGINT) AS tp, CAST(b AS BIGINT) AS fp,
-       CAST(c AS BIGINT) AS fn, CAST(d AS BIGINT) AS tn,
-       CAST(CASE WHEN (a + b) * (c + d) * (a + c) * (b + d) = 0 THEN 0
-            ELSE CASE WHEN a * d >= b * c THEN 1 ELSE -1 END
-                 * ((a * d - b * c) * (a * d - b * c) * 1000000
-                    // ((a + b) * (c + d) * (a + c) * (b + d))) END
-            AS BIGINT) AS mcc2_signed_e6
-FROM c
-"""
-
-
-@register("q_docs_mcc", _MCC_SQL)
-def q_docs_mcc(spark, sf_dir):
-    """Matthews correlation coefficient between the two
-    q_docs_cohen_kappa raters (length ≥ 300 vs topical substring), kept
-    exact by reporting the SIGNED SQUARE: MCC² = (ad−bc)²/((a+b)(c+d)
-    (a+c)(b+d)) carries MCC's sign through an explicit CASE, so the
-    balanced-confusion-matrix summary is a single e6 integer quotient —
-    no square root, no float (0 when any margin is empty, the sklearn
-    convention). Plan: one narrow scan projecting two CASE flags, one
-    4-cell reduction."""
-    d = _t(spark, sf_dir, "documents")
-    dec = "decimal(38,0)"
-    r1 = F.when(F.col("n_chars") >= 300, 1).otherwise(0)
-    r2 = F.when(F.instr("text", "spark") > 0, 1).otherwise(0)
-    c = d.select(r1.alias("r1"), r2.alias("r2")).agg(
-        F.sum(F.when((F.col("r1") == 1) & (F.col("r2") == 1), 1)
-              .otherwise(0)).cast(dec).alias("a"),
-        F.sum(F.when((F.col("r1") == 1) & (F.col("r2") == 0), 1)
-              .otherwise(0)).cast(dec).alias("b"),
-        F.sum(F.when((F.col("r1") == 0) & (F.col("r2") == 1), 1)
-              .otherwise(0)).cast(dec).alias("c"),
-        F.sum(F.when((F.col("r1") == 0) & (F.col("r2") == 0), 1)
-              .otherwise(0)).cast(dec).alias("d"))
-    return c.select(
-        F.col("a").cast("long").alias("tp"),
-        F.col("b").cast("long").alias("fp"),
-        F.col("c").cast("long").alias("fn"),
-        F.col("d").cast("long").alias("tn"),
-        F.expr("CAST(CASE WHEN (a + b) * (c + d) * (a + c) * (b + d) = 0"
-               " THEN 0 ELSE CASE WHEN a * d >= b * c THEN 1 ELSE -1 END"
-               " * ((a * d - b * c) * (a * d - b * c) * 1000000"
-               " div ((a + b) * (c + d) * (a + c) * (b + d))) END"
-               " AS BIGINT)").alias("mcc2_signed_e6"))
-
-
-_DID_SQL = """
-WITH c AS (
-  SELECT CASE WHEN user_id % 2 = 0 THEN 1 ELSE 0 END AS treat,
-         CASE WHEN day(CAST(ts AS TIMESTAMP)) > 15 THEN 1 ELSE 0 END
-             AS post,
-         CAST(count(*) AS HUGEINT) AS n,
-         CAST(sum(CAST(floor("value" * 100 + 0.5) AS HUGEINT)) AS HUGEINT)
-             AS s
-  FROM events GROUP BY 1, 2
-), p AS (
-  SELECT max(CASE WHEN treat = 1 AND post = 1 THEN s END) AS s11,
-         max(CASE WHEN treat = 1 AND post = 1 THEN n END) AS n11,
-         max(CASE WHEN treat = 1 AND post = 0 THEN s END) AS s10,
-         max(CASE WHEN treat = 1 AND post = 0 THEN n END) AS n10,
-         max(CASE WHEN treat = 0 AND post = 1 THEN s END) AS s01,
-         max(CASE WHEN treat = 0 AND post = 1 THEN n END) AS n01,
-         max(CASE WHEN treat = 0 AND post = 0 THEN s END) AS s00,
-         max(CASE WHEN treat = 0 AND post = 0 THEN n END) AS n00
-  FROM c
-)
-SELECT CAST(n11 + n10 AS BIGINT) AS n_treat,
-       CAST(n01 + n00 AS BIGINT) AS n_control,
-       CAST(s11 * 1000000 // n11 - s10 * 1000000 // n10 AS BIGINT)
-           AS delta_treat_e6,
-       CAST(s01 * 1000000 // n01 - s00 * 1000000 // n00 AS BIGINT)
-           AS delta_control_e6,
-       CAST((s11 * 1000000 // n11 - s10 * 1000000 // n10)
-            - (s01 * 1000000 // n01 - s00 * 1000000 // n00) AS BIGINT)
-           AS did_e6
-FROM p
-"""
-
-
-@register("q_events_did", _DID_SQL)
-def q_events_did(spark, sf_dir):
-    """Difference-in-differences: treatment = even user_ids, post =
-    back half of the month, outcome = mean e2 event value per cell. The
-    four cell means are floored ONCE to e6 from exact integer (Σ, n)
-    pairs — identical expressions both engines — and the DiD estimate is
-    then plain integer subtraction of the two within-group deltas, with
-    both deltas reported so the parallel-trends reader sees the pieces.
-    Plan: one map-side-combinable groupBy to FOUR cells, one 8-cell
-    pivot reduction — the scan is the entire cost at any scale."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    c = e.groupBy(
-        F.when(F.col("user_id") % 2 == 0, 1).otherwise(0).alias("treat"),
-        F.when(F.dayofmonth("ts") > 15, 1).otherwise(0).alias("post")) \
-        .agg(F.count(F.lit(1)).cast(dec).alias("n"),
-             F.sum(F.floor(F.col("value") * 100 + F.lit(0.5))).cast(dec)
-             .alias("s"))
-    p = c.agg(*[
-        F.max(F.when((F.col("treat") == t) & (F.col("post") == q),
-                     F.col(col))).alias(f"{col}{t}{q}")
-        for t in (1, 0) for q in (1, 0) for col in ("s", "n")])
-    return p.select(
-        F.expr("CAST(n11 + n10 AS BIGINT)").alias("n_treat"),
-        F.expr("CAST(n01 + n00 AS BIGINT)").alias("n_control"),
-        F.expr("CAST(s11 * 1000000 div n11 - s10 * 1000000 div n10"
-               " AS BIGINT)").alias("delta_treat_e6"),
-        F.expr("CAST(s01 * 1000000 div n01 - s00 * 1000000 div n00"
-               " AS BIGINT)").alias("delta_control_e6"),
-        F.expr("CAST((s11 * 1000000 div n11 - s10 * 1000000 div n10)"
-               " - (s01 * 1000000 div n01 - s00 * 1000000 div n00)"
-               " AS BIGINT)").alias("did_e6"))
-
-
-_PIECEWISE_SQL = """
-WITH d AS (
-  SELECT CAST(day(CAST(ts AS TIMESTAMP)) AS HUGEINT) AS t,
-         CAST(sum(CAST(floor("value" * 100 + 0.5) AS HUGEINT)) AS HUGEINT)
-             AS y
-  FROM events GROUP BY 1
-), r AS (
-  SELECT t AS x1, CASE WHEN t > 15 THEN t - 15 ELSE 0 END AS x2, y FROM d
-), s AS (
-  SELECT CAST(count(*) AS HUGEINT) AS k, sum(x1) AS sx1, sum(x2) AS sx2,
-         sum(y) AS sy, sum(x1 * x1) AS sx11, sum(x2 * x2) AS sx22,
-         sum(x1 * x2) AS sx12, sum(x1 * y) AS sx1y, sum(x2 * y) AS sx2y
-  FROM r
-), c AS (
-  SELECT k, sx1, sx2, sy,
-         k * sx11 - sx1 * sx1 AS s11, k * sx22 - sx2 * sx2 AS s22,
-         k * sx12 - sx1 * sx2 AS s12, k * sx1y - sx1 * sy AS s1y,
-         k * sx2y - sx2 * sy AS s2y
-  FROM s
-), b AS (
-  SELECT k, sx1, sx2, sy,
-         (s1y * s22 - s2y * s12) * 1000000 // (s11 * s22 - s12 * s12)
-             AS b1_e6,
-         (s2y * s11 - s1y * s12) * 1000000 // (s11 * s22 - s12 * s12)
-             AS b2_e6
-  FROM c
-)
-SELECT CAST(k AS BIGINT) AS n_days, CAST(b1_e6 AS BIGINT) AS slope_pre_e6,
-       CAST(b1_e6 + b2_e6 AS BIGINT) AS slope_post_e6,
-       CAST(b2_e6 AS BIGINT) AS slope_change_e6,
-       CAST((sy * 1000000 - b1_e6 * sx1 - b2_e6 * sx2) // k AS BIGINT)
-           AS intercept_e6
-FROM b
-"""
-
-
-@register("q_events_piecewise_trend", _PIECEWISE_SQL)
-def q_events_piecewise_trend(spark, sf_dir):
-    """Segmented (broken-stick) regression of daily e2 revenue with a
-    knot at day 15: basis (t, (t−15)₊) through the exact Cramer normal
-    equations of q_lineitem_ols2, so pre-knot slope, post-knot slope and
-    the slope CHANGE at the knot (the quantity a launch/incident
-    analysis reads) are exact e6 integer quotients — the continuous
-    piecewise-linear fit no plain OLS trend can express. Plan: one
-    map-side-combinable daily groupBy, then a 9-sum reduction over
-    O(calendar) rows — the hinge basis is computed per row, no second
-    pass."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d = (e.groupBy(F.dayofmonth("ts").cast(dec).alias("t"))
-         .agg(F.sum(F.floor(F.col("value") * 100 + F.lit(0.5))).cast(dec)
-              .alias("y")))
-    r = d.select(
-        F.col("t").alias("x1"),
-        F.when(F.col("t") > 15, F.col("t") - 15).otherwise(
-            F.lit(0).cast(dec)).alias("x2"), "y")
-    s = r.agg(F.count(F.lit(1)).cast(dec).alias("k"),
-              F.sum("x1").alias("sx1"), F.sum("x2").alias("sx2"),
-              F.sum("y").alias("sy"),
-              F.sum(F.col("x1") * F.col("x1")).alias("sx11"),
-              F.sum(F.col("x2") * F.col("x2")).alias("sx22"),
-              F.sum(F.col("x1") * F.col("x2")).alias("sx12"),
-              F.sum(F.col("x1") * F.col("y")).alias("sx1y"),
-              F.sum(F.col("x2") * F.col("y")).alias("sx2y"))
-    c = s.select(
-        "k", "sx1", "sx2", "sy",
-        F.expr("k * sx11 - sx1 * sx1").alias("s11"),
-        F.expr("k * sx22 - sx2 * sx2").alias("s22"),
-        F.expr("k * sx12 - sx1 * sx2").alias("s12"),
-        F.expr("k * sx1y - sx1 * sy").alias("s1y"),
-        F.expr("k * sx2y - sx2 * sy").alias("s2y"))
-    b = c.select(
-        "k", "sx1", "sx2", "sy",
-        F.expr("CAST((s1y * s22 - s2y * s12) * 1000000"
-               " div (s11 * s22 - s12 * s12) AS DECIMAL(38,0))")
-        .alias("b1_e6"),
-        F.expr("CAST((s2y * s11 - s1y * s12) * 1000000"
-               " div (s11 * s22 - s12 * s12) AS DECIMAL(38,0))")
-        .alias("b2_e6"))
-    return b.select(
-        F.col("k").cast("long").alias("n_days"),
-        F.col("b1_e6").cast("long").alias("slope_pre_e6"),
-        F.expr("CAST(b1_e6 + b2_e6 AS BIGINT)").alias("slope_post_e6"),
-        F.col("b2_e6").cast("long").alias("slope_change_e6"),
-        F.expr("CAST((sy * 1000000 - b1_e6 * sx1 - b2_e6 * sx2) div k"
-               " AS BIGINT)").alias("intercept_e6"))
-
-
-_SKYLINE_SQL = """
-SELECT p.p_partkey, p.p_name,
-       CAST(floor(p.p_retailprice * 100 + 0.5) AS BIGINT) AS price_e2,
-       CAST(p.p_size AS INTEGER) AS p_size
-FROM part p
-WHERE NOT EXISTS (
-  SELECT 1 FROM part q
-  WHERE floor(q.p_retailprice * 100 + 0.5)
-            <= floor(p.p_retailprice * 100 + 0.5)
-    AND q.p_size >= p.p_size
-    AND (floor(q.p_retailprice * 100 + 0.5)
-             < floor(p.p_retailprice * 100 + 0.5)
-         OR q.p_size > p.p_size)
-)
-"""
-
-
-@register("q_parts_skyline", _SKYLINE_SQL)
-def q_parts_skyline(spark, sf_dir):
-    """Skyline (Pareto frontier) operator — Börzsönyi et al. ICDE'01:
-    the parts not dominated on (minimize price, maximize size). The
-    engine computes it WITHOUT the quadratic dominance join: sort by
-    (price asc, size desc), keep the top size within each exact price
-    (ties all survive unless outsized), then a strictly-cheaper running
-    max — a part survives iff its size exceeds every cheaper part's max
-    size. One sort, two windows, O(n log n); the oracle states the
-    textbook NOT EXISTS dominance definition directly, so the window
-    plan is verified against the semantics, not against itself. At
-    scale the sort is a range-partitioned shuffle on price — no pair
-    blowup ever."""
-    p = _t(spark, sf_dir, "part").select(
-        "p_partkey", "p_name",
-        F.floor(F.col("p_retailprice") * 100 + F.lit(0.5)).cast("long")
-        .alias("price_e2"),
-        F.col("p_size").cast("int").alias("p_size"))
-    wprice = Window.partitionBy("price_e2")
-    wrun = (Window.orderBy("price_e2")
-            .rangeBetween(Window.unboundedPreceding, -1))
-    sky = (p.withColumn("max_same", F.max("p_size").over(wprice))
-           .withColumn("max_cheaper", F.max("p_size").over(wrun))
-           .filter((F.col("p_size") == F.col("max_same"))
-                   & (F.col("max_cheaper").isNull()
-                      | (F.col("p_size") > F.col("max_cheaper")))))
-    return sky.select("p_partkey", "p_name", "price_e2", "p_size")
-
-
-_WASSERSTEIN_SQL = """
-WITH y AS (
-  SELECT CAST(floor("value" * 100 + 0.5) AS HUGEINT) AS y,
-         CASE WHEN isodow(CAST(ts AS TIMESTAMP)) >= 6 THEN 1 ELSE 0 END
-             AS grp
-  FROM events
-), v AS (
-  SELECT y,
-         CAST(count(*) FILTER (WHERE grp = 0) AS HUGEINT) AS ca,
-         CAST(count(*) FILTER (WHERE grp = 1) AS HUGEINT) AS cb
-  FROM y GROUP BY 1
-), c AS (
-  SELECT y, sum(ca) OVER (ORDER BY y) AS cuma,
-         sum(cb) OVER (ORDER BY y) AS cumb,
-         lead(y) OVER (ORDER BY y) AS ynext,
-         sum(ca) OVER () AS n, sum(cb) OVER () AS m
-  FROM v
-), s AS (
-  SELECT max(n) AS n, max(m) AS m,
-         sum(abs(cuma * m - cumb * n) * (ynext - y)) AS num
-  FROM c WHERE ynext IS NOT NULL
-)
-SELECT CAST(n AS BIGINT) AS n_weekday, CAST(m AS BIGINT) AS n_weekend,
-       CAST(num * 1000000 // (n * m) AS BIGINT) AS w1_e2e6
-FROM s
-"""
-
-
-@register("q_events_wasserstein", _WASSERSTEIN_SQL)
-def q_events_wasserstein(spark, sf_dir):
-    """Wasserstein-1 (earth mover's) distance between the weekday and
-    weekend value distributions — the CDF-area identity
-    W₁ = ∫|F_A − F_B| dv over the distinct e2 support: each segment
-    contributes |cumA·m − cumB·n|·Δv in exact integers over the common
-    denominator n·m, floored once to e6 (e2 value units) — the optimal-
-    transport counterpart of q_events_energy_distance's metric test.
-    Plan: one map-side-combinable distinct-value groupBy, one ordered
-    cumulative/lead window over value cardinality (≈2000 rows), one
-    3-cell reduction."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    y = e.select(
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast(dec).alias("y"),
-        F.when(F.expr("weekday(ts)") >= 5, 1).otherwise(0).alias("grp"))
-    v = y.groupBy("y").agg(
-        F.sum(F.when(F.col("grp") == 0, 1).otherwise(0)).cast(dec)
-        .alias("ca"),
-        F.sum(F.when(F.col("grp") == 1, 1).otherwise(0)).cast(dec)
-        .alias("cb"))
-    w = Window.orderBy("y")
-    wa = Window.rowsBetween(Window.unboundedPreceding,
-                            Window.unboundedFollowing)
-    c = v.select(
-        "y", F.sum("ca").over(w).alias("cuma"),
-        F.sum("cb").over(w).alias("cumb"),
-        F.lead("y").over(w).alias("ynext"),
-        F.sum("ca").over(wa).alias("n"), F.sum("cb").over(wa).alias("m"))
-    s = (c.filter(F.col("ynext").isNotNull())
-         .agg(F.max("n").alias("n"), F.max("m").alias("m"),
-              F.sum(F.abs(F.col("cuma") * F.col("m")
-                          - F.col("cumb") * F.col("n"))
-                    * (F.col("ynext") - F.col("y"))).alias("num")))
-    return s.select(
-        F.col("n").cast("long").alias("n_weekday"),
-        F.col("m").cast("long").alias("n_weekend"),
-        F.expr("CAST(num * 1000000 div (n * m) AS BIGINT)")
-        .alias("w1_e2e6"))
-
-
-_FLEISS_SQL = """
-WITH r AS (
-  SELECT (CASE WHEN n_chars >= 300 THEN 1 ELSE 0 END
-        + CASE WHEN strpos(text, 'spark') > 0 THEN 1 ELSE 0 END
-        + CASE WHEN strpos(text, 'data') > 0 THEN 1 ELSE 0 END) AS n1
-  FROM documents
-), a AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n,
-         CAST(sum(n1) AS HUGEINT) AS s1,
-         CAST(sum(n1 * n1 + (3 - n1) * (3 - n1)) AS HUGEINT) AS sq
-  FROM r
-), k AS (
-  SELECT n, s1, 3 * n - s1 AS s0, sq - 3 * n AS a3 FROM a
-)
-SELECT CAST(n AS BIGINT) AS n_docs, CAST(s1 AS BIGINT) AS n_pos_ratings,
-       CAST(a3 * 1000000 // (6 * n) AS BIGINT) AS p_bar_e6,
-       CAST((s1 * s1 + s0 * s0) * 1000000 // (9 * n * n) AS BIGINT)
-           AS p_e_e6,
-       CAST((3 * n * a3 - 2 * (s1 * s1 + s0 * s0)) * 1000000
-            // (2 * (9 * n * n - s1 * s1 - s0 * s0)) AS BIGINT)
-           AS fleiss_kappa_e6
-FROM k
-"""
-
-
-@register("q_docs_fleiss_kappa", _FLEISS_SQL)
-def q_docs_fleiss_kappa(spark, sf_dir):
-    """Fleiss' kappa for THREE raters per document (length ≥ 300,
-    contains 'spark', contains 'data' — the multi-rater extension of
-    q_docs_cohen_kappa's pair): per-item agreement P_i =
-    (n₁²+n₀²−3)/6 and chance agreement from the pooled category
-    proportions are cleared of every fraction, collapsing to
-    κ = (3N·A − 2(S₁²+S₀²)) / (2(9N² − S₁² − S₀²)) with
-    A = Σ(n₁²+n₀²) − 3N — one exact integer quotient, no float ever
-    forms. Plan: one narrow scan projecting a 0..3 rating count, one
-    3-cell reduction — the scan is the whole cost at any scale."""
-    d = _t(spark, sf_dir, "documents")
-    dec = "decimal(38,0)"
-    n1 = (F.when(F.col("n_chars") >= 300, 1).otherwise(0)
-          + F.when(F.instr("text", "spark") > 0, 1).otherwise(0)
-          + F.when(F.instr("text", "data") > 0, 1).otherwise(0))
-    a = d.select(n1.alias("n1")).agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum("n1").cast(dec).alias("s1"),
-        F.sum(F.col("n1") * F.col("n1")
-              + (3 - F.col("n1")) * (3 - F.col("n1"))).cast(dec)
-        .alias("sq"))
-    k = a.select("n", "s1",
-                 F.expr("3 * n - s1").alias("s0"),
-                 F.expr("sq - 3 * n").alias("a3"))
-    return k.select(
-        F.col("n").cast("long").alias("n_docs"),
-        F.col("s1").cast("long").alias("n_pos_ratings"),
-        F.expr("CAST(a3 * 1000000 div (6 * n) AS BIGINT)")
-        .alias("p_bar_e6"),
-        F.expr("CAST((s1 * s1 + s0 * s0) * 1000000 div (9 * n * n)"
-               " AS BIGINT)").alias("p_e_e6"),
-        F.expr("CAST((3 * n * a3 - 2 * (s1 * s1 + s0 * s0)) * 1000000"
-               " div (2 * (9 * n * n - s1 * s1 - s0 * s0)) AS BIGINT)")
-        .alias("fleiss_kappa_e6"))
-
-
-_CRAMERS_V_SQL = """
-WITH o AS (
-  SELECT event_type, CAST(hour(ts) // 6 AS INTEGER) AS daypart,
-         CAST(count(*) AS HUGEINT) AS o
-  FROM events GROUP BY 1, 2
-), m AS (
-  SELECT event_type, daypart, o,
-         sum(o) OVER (PARTITION BY event_type) AS r,
-         sum(o) OVER (PARTITION BY daypart) AS c,
-         sum(o) OVER () AS n
-  FROM o
-), t AS (
-  SELECT max(n) AS n,
-         CAST(count(DISTINCT event_type) AS HUGEINT) AS nr,
-         CAST(count(DISTINCT daypart) AS HUGEINT) AS nc,
-         sum((o * n - r * c) * (o * n - r * c) * 1000000000
-             // (n * r * c)) AS chi2_e9
-  FROM m
-)
-SELECT CAST(n AS BIGINT) AS n_events, CAST(nr AS BIGINT) AS n_rows_dim,
-       CAST(nc AS BIGINT) AS n_cols_dim,
-       CAST(chi2_e9 // 1000 AS BIGINT) AS chi2_e6,
-       CAST(chi2_e9 // (n * (least(nr, nc) - 1) * 1000) AS BIGINT)
-           AS cramers_v2_e6
-FROM t
-"""
-
-
-@register("q_events_cramers_v", _CRAMERS_V_SQL)
-def q_events_cramers_v(spark, sf_dir):
-    """Cramér's V association between event type and day-part on the
-    5×4 contingency table, reported as the exact V² = (χ²/n)/(min(r,c)−1):
-    each cell's χ² term (o·n − r·c)²/(n·r·c) is floored ONCE to e9 from
-    exact integer margins (identical expression both engines), so the
-    effect-size normalization every cross-tab comparison needs stays
-    integer all the way down. Plan: one map-side-combinable groupBy to
-    20 cells, margins from windows over those 20 rows, one reduction."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    o = (e.groupBy("event_type",
-                   F.expr("CAST(hour(ts) div 6 AS INT)").alias("daypart"))
-         .agg(F.count(F.lit(1)).cast(dec).alias("o")))
-    m = o.select(
-        "event_type", "daypart", "o",
-        F.sum("o").over(Window.partitionBy("event_type")).alias("r"),
-        F.sum("o").over(Window.partitionBy("daypart")).alias("c"),
-        F.sum("o").over(Window.rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing))
-        .alias("n"))
-    t = m.agg(
-        F.max("n").alias("n"),
-        F.countDistinct("event_type").cast(dec).alias("nr"),
-        F.countDistinct("daypart").cast(dec).alias("nc"),
-        F.sum(F.expr("CAST((o * n - r * c) * (o * n - r * c) * 1000000000"
-                     " div (n * r * c) AS DECIMAL(38,0))")).alias("chi2_e9"))
-    return t.select(
-        F.col("n").cast("long").alias("n_events"),
-        F.col("nr").cast("long").alias("n_rows_dim"),
-        F.col("nc").cast("long").alias("n_cols_dim"),
-        F.expr("CAST(chi2_e9 div 1000 AS BIGINT)").alias("chi2_e6"),
-        F.expr("CAST(chi2_e9 div (n * (least(nr, nc) - 1) * 1000)"
-               " AS BIGINT)").alias("cramers_v2_e6"))
-
-
-_NTRIPLES_SQL = f"""
-WITH m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), n AS (
-  SELECT term, count(*) AS n FROM m GROUP BY term
-), pairs AS (
-  SELECT a.term AS term_a, b.term AS term_b, count(*) AS common
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), e AS (
-  SELECT p.term_a AS a, typ.pred, p.term_b AS b, p.common,
-         least(p.common, 10) AS ce1
-  FROM pairs p
-  JOIN {kg_docs.typing_values_sql()}
-    ON typ.term_a = p.term_a AND typ.term_b = p.term_b
-), nodes AS (
-  SELECT DISTINCT term FROM (
-    SELECT a AS term FROM e UNION ALL SELECT b FROM e
-  )
-)
-SELECT '<urn:kg:e:' || a || '> <urn:kg:p:' || pred || '> <urn:kg:e:'
-       || b || '> .' AS ntriple FROM e
-UNION ALL
-SELECT '<urn:kg:s:' || a || ':' || pred || ':' || b
-       || '> <urn:kg:p:common> "' || CAST(common AS VARCHAR)
-       || '"^^<http://www.w3.org/2001/XMLSchema#integer> .' FROM e
-UNION ALL
-SELECT '<urn:kg:s:' || a || ':' || pred || ':' || b
-       || '> <urn:kg:p:confidence> "' || CAST(ce1 // 10 AS VARCHAR) || '.'
-       || CAST(ce1 % 10 AS VARCHAR)
-       || '"^^<http://www.w3.org/2001/XMLSchema#decimal> .' FROM e
-UNION ALL
-SELECT '<urn:kg:e:' || term
-       || '> <http://www.w3.org/2000/01/rdf-schema#label> "'
-       || replace(replace(term, chr(92), chr(92) || chr(92)),
-                  chr(34), chr(92) || chr(34)) || '" .' FROM nodes
-"""
-
-
-@register("kg_ntriples_export_docs", _NTRIPLES_SQL)
-def kg_ntriples_export_docs(spark, sf_dir):
-    """N-Triples (W3C RDF line format) serialization of the typed KG —
-    the interchange sibling of the JSON/GraphML exports
-    (kep/sources/exports.py; reference analog src/graph/export.py's
-    format family): one relation triple per typed edge, plus an
-    RDF-reified statement node carrying the co-occurrence support as an
-    xsd:integer literal and the confidence as an xsd:decimal literal
-    (built from least(common,10) in pure integer string math — no float
-    ever formatted), plus one rdfs:label literal per graph node with the
-    standard N-Triples escape chain (backslash then quote) applied.
-    Plan: the memoized typed-edge aggregate, then three map-side literal
-    projections and a vocabulary-sized distinct — at any corpus scale the
-    export is one narrow scan over the edge table, embarrassingly
-    parallel, written line-per-row exactly as a distributed text sink
-    wants it."""
-    e = _typed_edges(spark, sf_dir).select(
-        F.col("term_a").alias("a"), "pred", F.col("term_b").alias("b"),
-        "common", F.least(F.col("common"), F.lit(10)).alias("ce1"))
-    bs, qt = chr(92), chr(34)
-    rel = e.select(
-        F.concat(F.lit("<urn:kg:e:"), "a", F.lit("> <urn:kg:p:"), "pred",
-                 F.lit("> <urn:kg:e:"), "b", F.lit("> .")).alias("ntriple"))
-    stmt = F.concat(F.lit("<urn:kg:s:"), "a", F.lit(":"), "pred",
-                    F.lit(":"), "b")
-    common = e.select(
-        F.concat(stmt, F.lit('> <urn:kg:p:common> "'),
-                 F.col("common").cast("string"),
-                 F.lit('"^^<http://www.w3.org/2001/XMLSchema#integer> .'))
-        .alias("ntriple"))
-    conf = e.select(
-        F.concat(stmt, F.lit('> <urn:kg:p:confidence> "'),
-                 (F.col("ce1") / 10).cast("int").cast("string"), F.lit("."),
-                 (F.col("ce1") % 10).cast("string"),
-                 F.lit('"^^<http://www.w3.org/2001/XMLSchema#decimal> .'))
-        .alias("ntriple"))
-    nodes = (e.select(F.col("a").alias("term"))
-             .union(e.select("b")).distinct())
-    esc = F.replace(
-        F.replace(F.col("term"), F.lit(bs), F.lit(bs + bs)),
-        F.lit(qt), F.lit(bs + qt))
-    labels = nodes.select(
-        F.concat(F.lit("<urn:kg:e:"), "term",
-                 F.lit('> <http://www.w3.org/2000/01/rdf-schema#label> "'),
-                 esc, F.lit('" .')).alias("ntriple"))
-    return rel.unionAll(common).unionAll(conf).unionAll(labels)
-
-
-# Soundex fold replicated from the classic US-English algorithm (the same
-# mapping Spark's JVM soundex uses): keep the (uppercased) first letter;
-# map A-Z to '01230127022455012623017202' (7 = H/W, 0 = vowels); fold left
-# to right carrying (output, last_code): H/W are transparent (last_code
-# unchanged, so duplicates across H/W collapse), vowels reset last_code
-# (so repeats across vowels re-emit), a new nonzero code != last appends;
-# pad/truncate to 4. The engine runs the JVM built-in; the oracle runs
-# this fold — agreement is checked per distinct word, so the algorithm is
-# verified exhaustively over the corpus vocabulary.
-_SOUNDEX_MAP = "01230127022455012623017202"
-
-
-def _soundex_sql_expr(word: str) -> str:
-    code = (f"'{_SOUNDEX_MAP}'"
-            f"[strpos('ABCDEFGHIJKLMNOPQRSTUVWXYZ', upper({word})[i:i])]")
-    return f"""rpad(substr(string_split(list_reduce(
-      list_prepend(upper({word})[1:1] || '#' || codes[1], codes[2:]),
-      (acc, code) -> CASE
-        WHEN code = '7' THEN acc
-        WHEN code = '0' THEN string_split(acc, '#')[1] || '#0'
-        WHEN code = string_split(acc, '#')[2] THEN acc
-        ELSE string_split(acc, '#')[1] || code || '#' || code END
-    ), '#')[1], 1, 4), 4, '0')""".replace("codes", f"""list_transform(
-      range(1, length({word}) + 1), i -> {code})""", 2)
-
-
-_SOUNDEX_SQL = f"""
-WITH w AS (
-  SELECT word, 'doc' AS source FROM (
-    SELECT DISTINCT unnest(string_split(text, ' ')) AS word FROM documents
-  ) WHERE regexp_matches(word, '^[a-z]+$')
-  UNION ALL
-  SELECT word, 'part' AS source FROM (
-    SELECT DISTINCT unnest(string_split(p_name, ' ')) AS word FROM part
-  ) WHERE regexp_matches(word, '^[a-z]+$')
-), s AS (
-  SELECT word, source, {_soundex_sql_expr('word')} AS soundex FROM w
-)
-SELECT word, source, soundex,
-       CAST(count(*) OVER (PARTITION BY soundex) AS BIGINT) AS block_size,
-       CAST(count(*) OVER (PARTITION BY soundex)
-            - count(*) OVER (PARTITION BY soundex, source) AS BIGINT)
-           AS n_cross_source
-FROM s
-"""
-
-
-@register("kg_soundex_blocking", _SOUNDEX_SQL)
-def kg_soundex_blocking(spark, sf_dir):
-    """Phonetic blocking for entity linking: every distinct alphabetic
-    word from the documents corpus and the part-name vocabulary gets its
-    Soundex code; words sharing a code form a candidate block (the
-    classic record-linkage blocking key — candidate pairs are the
-    within-block cross products, never all-pairs). Output is the full
-    blocking table — (word, source, soundex, block size, cross-source
-    member count) — so the JVM built-in soundex is verified exhaustively
-    against the oracle's letter-by-letter fold for every vocabulary word.
-    Complements the edit-distance/Jaro-Winkler blocked matchers
-    (dedup_damerau_docs, q_part_name_jw_match) with the phonetic key
-    family. Plan: two distinct-word aggregates (map-side partial over
-    exploded words), one vocabulary-sized window — corpus scans dominate,
-    the blocking itself is vocabulary-scale."""
-    d = _t(spark, sf_dir, "documents")
-    p = _t(spark, sf_dir, "part")
-    alpha = F.col("word").rlike("^[a-z]+$")
-    dw = (d.select(F.explode(F.split("text", " ")).alias("word"))
-          .distinct().filter(alpha)
-          .select("word", F.lit("doc").alias("source")))
-    pw = (p.select(F.explode(F.split("p_name", " ")).alias("word"))
-          .distinct().filter(alpha)
-          .select("word", F.lit("part").alias("source")))
-    s = dw.unionAll(pw).select(
-        "word", "source", F.soundex(F.upper("word")).alias("soundex"))
-    wb = Window.partitionBy("soundex")
-    wbs = Window.partitionBy("soundex", "source")
-    return s.select(
-        "word", "source", "soundex",
-        F.count(F.lit(1)).over(wb).cast("long").alias("block_size"),
-        (F.count(F.lit(1)).over(wb) - F.count(F.lit(1)).over(wbs))
-        .cast("long").alias("n_cross_source"))
-
-
-_TRANSE_DIM = 8
-
-
-def _transe_emb_sql(prefix: str, key: str) -> str:
-    return (f"CAST(CAST(concat('0x', substr(md5(concat('{prefix}:', {key},"
-            f" ':', CAST(i AS VARCHAR))), 1, 16)) AS UBIGINT)"
-            f" % 2001 AS BIGINT) - 1000")
-
-
-_TRANSE_SQL = f"""
-WITH m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), pairs AS (
-  SELECT a.term AS term_a, b.term AS term_b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), e AS (
-  SELECT p.term_a AS h, typ.pred AS r, p.term_b AS t
-  FROM pairs p
-  JOIN {kg_docs.typing_values_sql()}
-    ON typ.term_a = p.term_a AND typ.term_b = p.term_b
-), ent AS (
-  SELECT term FROM {kg_docs.lexicon_values_sql()}
-), dim AS (
-  SELECT CAST(i AS INTEGER) AS i FROM range(0, {_TRANSE_DIM}) t(i)
-), emb AS (
-  SELECT term, i, {_transe_emb_sql('ent', 'term')} AS v FROM ent, dim
-), rel AS (
-  SELECT r, i, {_transe_emb_sql('rel', 'r')} AS v
-  FROM (SELECT DISTINCT r FROM e), dim
-), sc AS (
-  SELECT e.h, e.r, e.t, c.term AS c, sum(abs(eh.v + rv.v - ec.v)) AS s
-  FROM e
-  JOIN ent c ON TRUE
-  JOIN emb eh ON eh.term = e.h
-  JOIN rel rv ON rv.r = e.r AND rv.i = eh.i
-  JOIN emb ec ON ec.term = c.term AND ec.i = eh.i
-  GROUP BY e.h, e.r, e.t, c.term
-), rk AS (
-  SELECT h, r, t, c,
-         row_number() OVER (PARTITION BY h, r, t ORDER BY s, c) AS rn
-  FROM sc
-), tr AS (
-  SELECT h, r, t, rn AS rnk FROM rk WHERE c = t
-)
-SELECT r AS pred, CAST(count(*) AS BIGINT) AS n_edges,
-       CAST(sum(rnk) * 1000000 // count(*) AS BIGINT) AS mr_e6,
-       CAST(sum(1000000000 // rnk) // count(*) AS BIGINT) AS mrr_e9,
-       CAST(count(*) FILTER (WHERE rnk <= 1) AS BIGINT) AS hits_at_1,
-       CAST(count(*) FILTER (WHERE rnk <= 3) AS BIGINT) AS hits_at_3,
-       CAST(count(*) FILTER (WHERE rnk <= 10) AS BIGINT) AS hits_at_10
-FROM tr GROUP BY r
-"""
-
-
-@register("kg_transe_eval_docs", _TRANSE_SQL)
-def kg_transe_eval_docs(spark, sf_dir):
-    """TransE-style KG-embedding evaluation under the raw corrupted-tail
-    protocol: deterministic integer embeddings e(x) ∈ [-1000,1000]^8
-    (md5-derived per (name, dim) — the same cross-engine derived-
-    randomness discipline as kg_negative_samples), score(h,r,t) =
-    Σ|e(h)+e(r)−e(t)| in exact integers, and for every typed edge the
-    true tail is ranked among ALL vocabulary entities by (score, term) —
-    position-deterministic, tie-safe. Per-predicate link-prediction
-    metrics: mean rank (e6), MRR (per-edge reciprocal floored at e9 then
-    floored mean — one integer quotient chain), hits@{{1,3,10}}.
-    Plan: corpus scan → memoized typed edges; the ranking grid is
-    |edges|×|vocab|×{_TRANSE_DIM} rows, vocabulary-projected (documented
-    scope, like the all-pairs centralities) — at production KG scale the
-    same plan shape shards the candidate set by entity-hash blocks."""
-    ee = _typed_edges(spark, sf_dir).select(
-        F.col("term_a").alias("h"), F.col("pred").alias("r"),
-        F.col("term_b").alias("t"))
-    ent = kg_docs.lexicon_df(spark).select("term")
-    dims = spark.range(0, _TRANSE_DIM).select(F.col("id").cast("int")
-                                              .alias("i"))
-
-    def _emb(prefix, key):
-        return (F.conv(F.substring(F.md5(F.concat(
-            F.lit(prefix + ":"), F.col(key), F.lit(":"),
-            F.col("i").cast("string"))), 1, 16), 16, 10)
-            .cast("decimal(38,0)") % 2001).cast("long") - 1000
-
-    emb = ent.crossJoin(F.broadcast(dims)).select(
-        "term", "i", _emb("ent", "term").alias("v"))
-    rels = ee.select("r").distinct()
-    rel = rels.crossJoin(F.broadcast(dims)).select(
-        "r", "i", _emb("rel", "r").alias("v"))
-    sc = (ee.crossJoin(F.broadcast(ent.select(F.col("term").alias("c"))))
-          .join(F.broadcast(emb.selectExpr("term AS h", "i",
-                                           "v AS vh")), "h")
-          .join(F.broadcast(rel.selectExpr("r", "i", "v AS vr")),
-                ["r", "i"])
-          .join(F.broadcast(emb.selectExpr("term AS c", "i",
-                                           "v AS vc")), ["c", "i"])
-          .groupBy("h", "r", "t", "c")
-          .agg(F.sum(F.abs(F.col("vh") + F.col("vr") - F.col("vc")))
-               .alias("s")))
-    w = Window.partitionBy("h", "r", "t").orderBy("s", "c")
-    tr = (sc.withColumn("rank", F.row_number().over(w))
-          .filter(F.col("c") == F.col("t")))
-    return (tr.groupBy(F.col("r").alias("pred"))
-            .agg(F.count(F.lit(1)).cast("long").alias("n_edges"),
-                 F.expr("CAST(sum(rank) * 1000000 div count(*) AS BIGINT)")
-                 .alias("mr_e6"),
-                 F.expr("CAST(sum(1000000000 div rank) div count(*)"
-                        " AS BIGINT)").alias("mrr_e9"),
-                 F.sum(F.when(F.col("rank") <= 1, 1).otherwise(0))
-                 .cast("long").alias("hits_at_1"),
-                 F.sum(F.when(F.col("rank") <= 3, 1).otherwise(0))
-                 .cast("long").alias("hits_at_3"),
-                 F.sum(F.when(F.col("rank") <= 10, 1).otherwise(0))
-                 .cast("long").alias("hits_at_10")))
-
-
-_TRANSE_MARGIN = 2000
-
-
-_TRANSE_SGD_SQL = f"""
-WITH m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), pairs AS (
-  SELECT a.term AS term_a, b.term AS term_b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), e AS (
-  SELECT p.term_a AS h, typ.pred AS r, p.term_b AS t
-  FROM pairs p
-  JOIN {kg_docs.typing_values_sql()}
-    ON typ.term_a = p.term_a AND typ.term_b = p.term_b
-), ent AS (
-  SELECT term, CAST(row_number() OVER (ORDER BY term) AS BIGINT) AS idx
-  FROM {kg_docs.lexicon_values_sql()}
-), nent AS (SELECT CAST(count(*) AS BIGINT) AS n FROM ent),
-en AS (
-  SELECT e.h, e.r, e.t, v.term AS tn
-  FROM e
-  JOIN ent v ON v.idx = 1 + CAST(
-    CAST(concat('0x', substr(md5(concat('neg:', e.h, ':', e.r, ':', e.t)),
-                1, 16)) AS UBIGINT) % (SELECT n FROM nent) AS BIGINT)
-), dim AS (
-  SELECT CAST(i AS INTEGER) AS i FROM range(0, {_TRANSE_DIM}) t(i)
-), emb AS (
-  SELECT term, i, {_transe_emb_sql('ent', 'term')} AS v
-  FROM (SELECT term FROM ent), dim
-), rel AS (
-  SELECT r, i, {_transe_emb_sql('rel', 'r')} AS v
-  FROM (SELECT DISTINCT r FROM e), dim
-), comp AS (
-  SELECT en.h, en.r, en.t, en.tn, d.i,
-         sign(eh.v + rv.v - et.v) AS g,
-         sign(eh.v + rv.v - etn.v) AS gn,
-         abs(eh.v + rv.v - et.v) AS dpos_i,
-         abs(eh.v + rv.v - etn.v) AS dneg_i
-  FROM en
-  JOIN dim d ON TRUE
-  JOIN emb eh ON eh.term = en.h AND eh.i = d.i
-  JOIN rel rv ON rv.r = en.r AND rv.i = d.i
-  JOIN emb et ON et.term = en.t AND et.i = d.i
-  JOIN emb etn ON etn.term = en.tn AND etn.i = d.i
-), viol AS (
-  SELECT h, r, t, tn FROM comp GROUP BY h, r, t, tn
-  HAVING sum(dpos_i) + {_TRANSE_MARGIN} > sum(dneg_i)
-), grads AS (
-  SELECT 'ent' AS kind, c.h AS name, c.i, -c.g + c.gn AS d FROM comp c
-  JOIN viol USING (h, r, t, tn)
-  UNION ALL
-  SELECT 'ent', c.t, c.i, c.g FROM comp c JOIN viol USING (h, r, t, tn)
-  UNION ALL
-  SELECT 'ent', c.tn, c.i, -c.gn FROM comp c JOIN viol USING (h, r, t, tn)
-  UNION ALL
-  SELECT 'rel', c.r, c.i, -c.g + c.gn FROM comp c
-  JOIN viol USING (h, r, t, tn)
-), delta AS (
-  SELECT kind, name, i, CAST(sum(d) AS BIGINT) AS delta
-  FROM grads GROUP BY 1, 2, 3
-), base AS (
-  SELECT 'ent' AS kind, term AS name, i, v FROM emb
-  UNION ALL
-  SELECT 'rel', r, i, v FROM rel
-)
-SELECT b.kind, b.name, CAST(b.i AS INTEGER) AS i,
-       CAST(b.v AS BIGINT) AS v0,
-       CAST(coalesce(delta.delta, 0) AS BIGINT) AS delta,
-       CAST(b.v + coalesce(delta.delta, 0) AS BIGINT) AS v1
-FROM base b
-LEFT JOIN delta ON delta.kind = b.kind AND delta.name = b.name
-                AND delta.i = b.i
-"""
-
-
-@register("kg_transe_sgd_step", _TRANSE_SGD_SQL)
-def kg_transe_sgd_step(spark, sf_dir):
-    """One exact TransE margin-SGD training step as a pure DataFrame job —
-    the training-side sibling of kg_transe_eval_docs: every typed edge
-    gets an md5-picked corrupted tail (same derived-randomness discipline
-    as kg_negative_samples; collisions with the true tail kept,
-    documented), the margin loss max(0, d(h,r,t) + γ − d(h,r,t')) is
-    evaluated in exact integers (γ=2000), and violated
-    triples emit per-dimension L1 sign gradients (lr=1 integer step, the
-    ℓ2 renorm of the float algorithm intentionally omitted for
-    exactness): Δh = −g+g', Δt = +g, Δt' = −g', Δr = −g+g'. Scatter rows
-    → one groupBy(name, dim) sum → join back to the base embeddings:
-    exactly the shuffle shape mini-batch KG-embedding training has at
-    10⁹ edges, where per-entity gradient aggregation is the hot
-    aggregate and hot entities are the skew risk (salting applies
-    unchanged). Output: every embedding cell with (v0, aggregated
-    delta, v1)."""
-    ee = _typed_edges(spark, sf_dir).select(
-        F.col("term_a").alias("h"), F.col("pred").alias("r"),
-        F.col("term_b").alias("t"))
-    went = Window.orderBy("term")
-    ent = (kg_docs.lexicon_df(spark).select("term")
-           .withColumn("idx", F.row_number().over(went).cast("long")))
-    n_ent = ent.count()  # lexicon-sized constant
-    pick = (F.conv(F.substring(F.md5(F.concat(
-        F.lit("neg:"), F.col("h"), F.lit(":"), F.col("r"), F.lit(":"),
-        F.col("t"))), 1, 16), 16, 10).cast("decimal(38,0)")
-        % n_ent).cast("long") + 1
-    en = (ee.withColumn("pidx", pick)
-          .join(F.broadcast(ent), F.col("pidx") == F.col("idx"))
-          .select("h", "r", "t", F.col("term").alias("tn")))
-    dims = spark.range(0, _TRANSE_DIM).select(
-        F.col("id").cast("int").alias("i"))
-
-    def _emb(prefix, key):
-        return (F.conv(F.substring(F.md5(F.concat(
-            F.lit(prefix + ":"), F.col(key), F.lit(":"),
-            F.col("i").cast("string"))), 1, 16), 16, 10)
-            .cast("decimal(38,0)") % 2001).cast("long") - 1000
-
-    emb = (ent.select("term").crossJoin(F.broadcast(dims))
-           .select("term", "i", _emb("ent", "term").alias("v")))
-    rel = (ee.select("r").distinct().crossJoin(F.broadcast(dims))
-           .select("r", "i", _emb("rel", "r").alias("v")))
-    comp = (en.crossJoin(F.broadcast(dims))
-            .join(F.broadcast(emb.selectExpr("term AS h", "i",
-                                             "v AS vh")), ["h", "i"])
-            .join(F.broadcast(rel.selectExpr("r", "i", "v AS vr")),
-                  ["r", "i"])
-            .join(F.broadcast(emb.selectExpr("term AS t", "i",
-                                             "v AS vt")), ["t", "i"])
-            .join(F.broadcast(emb.selectExpr("term AS tn", "i",
-                                             "v AS vn")), ["tn", "i"])
-            .select("h", "r", "t", "tn", "i",
-                    F.signum(F.col("vh") + F.col("vr") - F.col("vt"))
-                    .cast("long").alias("g"),
-                    F.signum(F.col("vh") + F.col("vr") - F.col("vn"))
-                    .cast("long").alias("gn"),
-                    F.abs(F.col("vh") + F.col("vr") - F.col("vt"))
-                    .alias("dpos_i"),
-                    F.abs(F.col("vh") + F.col("vr") - F.col("vn"))
-                    .alias("dneg_i")))
-    # comp feeds both the violation test and the gradient scatter —
-    # persist the (|edges|·8)-row grid so the one action computes the
-    # broadcast-join chain once instead of re-deriving it per branch
-    comp = _memo(spark, ("transe_comp", sf_dir), lambda: comp.persist())
-    viol = (comp.groupBy("h", "r", "t", "tn")
-            .agg(F.sum("dpos_i").alias("dp"), F.sum("dneg_i").alias("dn"))
-            .filter(F.col("dp") + _TRANSE_MARGIN > F.col("dn"))
-            .select("h", "r", "t", "tn"))
-    cv = comp.join(viol, ["h", "r", "t", "tn"])
-    # one pass, four gradient rows per cell via explode — a 4-branch
-    # unionAll would re-evaluate the whole join subtree per branch
-    grads = (cv.select(F.explode(F.array(
-        F.struct(F.lit("ent").alias("kind"), F.col("h").alias("name"),
-                 F.col("i").alias("i"),
-                 (-F.col("g") + F.col("gn")).alias("d")),
-        F.struct(F.lit("ent").alias("kind"), F.col("t").alias("name"),
-                 F.col("i").alias("i"), F.col("g").alias("d")),
-        F.struct(F.lit("ent").alias("kind"), F.col("tn").alias("name"),
-                 F.col("i").alias("i"), (-F.col("gn")).alias("d")),
-        F.struct(F.lit("rel").alias("kind"), F.col("r").alias("name"),
-                 F.col("i").alias("i"),
-                 (-F.col("g") + F.col("gn")).alias("d")))).alias("x"))
-        .select("x.kind", "x.name", "x.i", "x.d"))
-    delta = (grads.groupBy("kind", "name", "i")
-             .agg(F.sum("d").cast("long").alias("delta")))
-    base = (emb.select(F.lit("ent").alias("kind"),
-                       F.col("term").alias("name"), "i", "v")
-            .unionAll(rel.select(F.lit("rel"), F.col("r"), "i", "v")))
-    return (base.join(delta, ["kind", "name", "i"], "left")
-            .select("kind", "name", F.col("i").cast("int").alias("i"),
-                    F.col("v").cast("long").alias("v0"),
-                    F.coalesce(F.col("delta"), F.lit(0)).cast("long")
-                    .alias("delta"),
-                    (F.col("v") + F.coalesce(F.col("delta"), F.lit(0)))
-                    .cast("long").alias("v1")))
 
 
 _DSIR_BUCKETS = 64
@@ -22049,1289 +6681,6 @@ def data_dsir_weights(spark, sf_dir):
                     .alias("w_e9")))
 
 
-_BCUBED_SQL = f"""
-WITH gold AS (
-  SELECT doc_id,
-         md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g')) AS g
-  FROM documents
-), mset AS (
-  SELECT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), sys AS (
-  SELECT g.doc_id,
-         coalesce(md5(string_agg(DISTINCT m.term, ',' ORDER BY m.term)),
-                  'none') AS c
-  FROM gold g LEFT JOIN mset m ON m.doc_id = g.doc_id
-  GROUP BY g.doc_id
-), cells AS (
-  SELECT s.c, g.g, CAST(count(*) AS BIGINT) AS n_cg
-  FROM sys s JOIN gold g ON g.doc_id = s.doc_id
-  GROUP BY 1, 2
-), cs AS (SELECT c, CAST(sum(n_cg) AS BIGINT) AS n_c FROM cells GROUP BY 1),
-gs AS (SELECT g, CAST(sum(n_cg) AS BIGINT) AS n_g FROM cells GROUP BY 1),
-agg AS (
-  SELECT CAST(sum(cells.n_cg) AS BIGINT) AS n,
-         CAST(count(DISTINCT cells.c) AS BIGINT) AS n_clusters,
-         CAST(count(DISTINCT cells.g) AS BIGINT) AS n_gold,
-         CAST(sum(cells.n_cg * cells.n_cg * 1000000000 // cs.n_c)
-              AS BIGINT) AS sp,
-         CAST(sum(cells.n_cg * cells.n_cg * 1000000000 // gs.n_g)
-              AS BIGINT) AS sr
-  FROM cells JOIN cs ON cs.c = cells.c JOIN gs ON gs.g = cells.g
-)
-SELECT n AS n_docs, n_clusters, n_gold,
-       CAST(sp // n AS BIGINT) AS bcubed_p_e9,
-       CAST(sr // n AS BIGINT) AS bcubed_r_e9,
-       CAST(2 * (sp // n) * (sr // n) // ((sp // n) + (sr // n))
-            AS BIGINT) AS bcubed_f1_e9
-FROM agg
-"""
-
-
-@register("kg_bcubed_eval", _BCUBED_SQL)
-def kg_bcubed_eval(spark, sf_dir):
-    """B-cubed extrinsic clustering evaluation (Bagga & Baldwin 1998 —
-    the standard entity-resolution metric, per-ITEM precision/recall
-    rather than per-pair): system clustering = mention-term-set blocking
-    key (docs sharing the exact set of lexicon mentions cluster
-    together; no mentions → one 'none' block), gold = exact-duplicate
-    groups (the dedup_exact_docs normalization). B³P = mean over items of
-    |C(i)∩G(i)|/|C(i)| collapses to Σ_cells n_cg²/n_c — per-cell
-    e9-floored integer quotients, then one floored mean; recall mirrors
-    with n_g; F1 is one integer quotient of the floored P/R. Plan: one
-    corpus scan for both keys, a (cluster, gold) cell aggregate, two
-    side aggregates broadcast back — the contingency table is
-    cluster-count-sized, never item-sized, so the same plan audits a
-    10⁹-doc ER run."""
-    d = _t(spark, sf_dir, "documents")
-    gold = d.select(
-        "doc_id",
-        F.md5(F.regexp_replace(F.lower(F.trim(F.col("text"))),
-                               r"\s+", " ")).alias("g"))
-    mset = kg_docs.doc_mentions(spark, d).select("doc_id", "term").distinct()
-    # no mentions → collect_set is EMPTY (not null) in Spark, while the
-    # oracle's string_agg is NULL — branch on emptiness, not null
-    sysc = (gold.select("doc_id")
-            .join(mset, "doc_id", "left")
-            .groupBy("doc_id")
-            .agg(F.sort_array(F.collect_set("term")).alias("ts"))
-            .select("doc_id",
-                    F.when(F.size("ts") == 0, F.lit("none"))
-                    .otherwise(F.md5(F.array_join(F.col("ts"), ",")))
-                    .alias("c")))
-    cells = (sysc.join(gold, "doc_id")
-             .groupBy("c", "g")
-             .agg(F.count(F.lit(1)).cast("long").alias("n_cg")))
-    cs = cells.groupBy("c").agg(F.sum("n_cg").cast("long").alias("n_c"))
-    gs = cells.groupBy("g").agg(F.sum("n_cg").cast("long").alias("n_g"))
-    agg = (cells.join(cs, "c").join(gs, "g")
-           .agg(F.sum("n_cg").cast("long").alias("n"),
-                F.countDistinct("c").cast("long").alias("n_clusters"),
-                F.countDistinct("g").cast("long").alias("n_gold"),
-                F.sum(F.expr("n_cg * n_cg * 1000000000 div n_c"))
-                .cast("long").alias("sp"),
-                F.sum(F.expr("n_cg * n_cg * 1000000000 div n_g"))
-                .cast("long").alias("sr")))
-    return agg.select(
-        F.col("n").alias("n_docs"), "n_clusters", "n_gold",
-        F.expr("CAST(sp div n AS BIGINT)").alias("bcubed_p_e9"),
-        F.expr("CAST(sr div n AS BIGINT)").alias("bcubed_r_e9"),
-        F.expr("CAST(2 * (sp div n) * (sr div n)"
-               " div ((sp div n) + (sr div n)) AS BIGINT)")
-        .alias("bcubed_f1_e9"))
-
-
-def _tar_fixture_sql(n: int = 20, seed: int = 42) -> str:
-    """Oracle for the hand-rolled ustar walk (sources/archives.parse_tar):
-    member names, sizes, mtimes and content MD5s are re-derived from the
-    same pure (shard_id, j, seed) formulas the shard builder uses — no tar
-    bytes are touched here, so a wrong octal field width, a missed
-    512-byte data pad or a checksum-as-spaces slip in the parser flips the
-    hash. chksum_ok is asserted 1 for every member (stdlib-written
-    archives must checksum clean)."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.archives import (
-        tar_member_spec,
-    )
-    rows = []
-    for i in range(n):
-        for name, content, mtime in tar_member_spec(i, seed):
-            md5 = _h.md5(content).hexdigest()
-            rows.append(f"({i}, '{name}', {len(content)}, {mtime},"
-                        f" '0', 1, '{md5}')")
-    return (f"SELECT CAST(shard_id AS BIGINT) AS shard_id, name,"
-            f" CAST(size AS BIGINT) AS size, CAST(mtime AS BIGINT) AS mtime,"
-            f" typeflag, CAST(chksum_ok AS INTEGER) AS chksum_ok,"
-            f" content_md5"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(shard_id, name, size, mtime, typeflag, chksum_ok,"
-            f" content_md5)")
-
-
-@register("multimodal_tar_members", _tar_fixture_sql())
-def multimodal_tar_members(spark, sf_dir):
-    """WebDataset-style tar shard manifest: genuine POSIX ustar archives
-    (stdlib-written) listed by the HAND-ROLLED header walk in
-    sources/archives.parse_tar — octal size/mtime fields, checksum
-    verified with the chksum field read as spaces, data regions hashed
-    and skipped with 512-byte padding. This is the shard-ingestion
-    surface of a tar-sharded training corpus: one mapInPandas over the
-    binary shard column yields the member manifest, so a 10⁹-shard
-    listing is a single narrow scan with no driver involvement."""
-    from .sources.archives import synthetic_tar_shards, tar_member_manifest
-    out = tar_member_manifest(synthetic_tar_shards(spark, 20))
-    return out.select("shard_id", "name",
-                      F.col("size").cast("long").alias("size"),
-                      F.col("mtime").cast("long").alias("mtime"),
-                      "typeflag",
-                      F.col("chksum_ok").cast("int").alias("chksum_ok"),
-                      "content_md5")
-
-
-def _zip_fixture_sql(n: int = 20, seed: int = 42) -> str:
-    """Oracle for the hand-rolled ZIP central-directory walk: entry names,
-    methods, sizes and CRC-32s are re-derived from the same pure
-    (shard_id, j, seed) content formulas (CRC via zlib.crc32 on the spec
-    content, never on zip bytes); crc_ok asserts the parser's local-header
-    inflate+re-CRC round trip succeeded for every entry."""
-    import zlib as _z
-    from knowledge_extraction_pipeline_spark.sources.archives import (
-        zip_entry_spec,
-    )
-    rows = []
-    for i in range(n):
-        for name, content, method in zip_entry_spec(i, seed):
-            crc = _z.crc32(content) & 0xFFFFFFFF
-            rows.append(f"({i}, '{name}', {method}, {len(content)},"
-                        f" {crc}, 1)")
-    return (f"SELECT CAST(shard_id AS BIGINT) AS shard_id, name,"
-            f" CAST(method AS INTEGER) AS method,"
-            f" CAST(usize AS BIGINT) AS usize,"
-            f" CAST(crc32 AS BIGINT) AS crc32,"
-            f" CAST(crc_ok AS INTEGER) AS crc_ok"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(shard_id, name, method, usize, crc32, crc_ok)")
-
-
-@register("multimodal_zip_entries", _zip_fixture_sql())
-def multimodal_zip_entries(spark, sf_dir):
-    """ZIP shard manifest via the HAND-ROLLED central-directory walk
-    (sources/archives.parse_zip_central_directory): backwards EOCD scan,
-    PK\\x01\\x02 record iteration, and per-entry verification against the
-    LOCAL header — raw-deflate inflate (zlib wbits=-15) or stored copy,
-    CRC-32 and size re-checked. Mixed STORED/DEFLATED entries from the
-    stdlib writer; the oracle re-derives every manifest column from the
-    content formulas. The compressed-size column is deliberately excluded
-    (it is a zlib-version artifact, not a content property)."""
-    from .sources.archives import synthetic_zip_shards, zip_entry_manifest
-    out = zip_entry_manifest(synthetic_zip_shards(spark, 20))
-    return out.select("shard_id", "name",
-                      F.col("method").cast("int").alias("method"),
-                      F.col("usize").cast("long").alias("usize"),
-                      F.col("crc32").cast("long").alias("crc32"),
-                      F.col("crc_ok").cast("int").alias("crc_ok"))
-
-
-def _au_fixture_sql(n: int = 24, seed: int = 42) -> str:
-    """Oracle for the REAL Sun AU path: tones are pure formulas of
-    (id, t); even ids are 16-bit PCM big-endian (samples re-derived with
-    stdlib math exactly as the WAV oracle), odd ids are G.711 μ-law whose
-    companding round-trip is re-derived with the same INDEPENDENT
-    pure-Python int implementation the μ-law WAV oracle uses — a wrong
-    data-offset walk (the annotation field!), a byte-order slip or a
-    companding-bias error flips the hash."""
-    import math
-
-    def compress(v: int) -> int:
-        sign = 0x80 if v < 0 else 0
-        u = min(abs(v), 32635) + 0x84
-        seg = (u >> 7).bit_length() - 1
-        return ~(sign | (seg << 4) | ((u >> (seg + 3)) & 0x0F)) & 0xFF
-
-    def expand(c: int) -> int:
-        ui = ~c & 0xFF
-        seg = (ui >> 4) & 0x07
-        t = ((((ui & 0x0F) << 3) | 0x84) << seg) - 0x84
-        return -t if ui & 0x80 else t
-
-    rows = []
-    for i in range(n):
-        rate = 8000
-        ns = 280 + (i % 5) * 64
-        freq = 170.0 + (i * 43 + seed) % 520
-        amp = 13000 if i % 2 == 0 else 11000
-        raw = [int(math.sin(2 * math.pi * freq * t / rate) * amp)
-               for t in range(ns)]
-        x = raw if i % 2 == 0 else [expand(compress(v)) for v in raw]
-        s2 = sum(v * v for v in x)
-        rms = math.sqrt(s2 / ns)
-        zc = sum(1 for a, b in zip(x[:-1], x[1:]) if (a < 0) != (b < 0))
-        rows.append(f"({i}, {rate}, {ns}, {ns / rate!r}, {rms!r}, {zc})")
-    return _audio_feature_values_sql(rows)
-
-
-@register("multimodal_au_features", _au_fixture_sql())
-def multimodal_au_features(spark, sf_dir):
-    """REAL Sun AU (au/.snd) audio decode end to end
-    (sources/archives.decode_au): big-endian header walk honoring the
-    variable-length annotation via the data-offset field, 16-bit PCM-BE
-    and G.711 μ-law payloads both decoded, features checked against the
-    independent pure-Python re-derivation — the third container format of
-    the telephony-audio family (WAV μ-law, WAV A-law, AIFF, now AU)."""
-    from .sources.archives import extract_au_features, synthetic_au_media
-    out = extract_au_features(synthetic_au_media(spark, 24))
-    return out.select("media_id",
-                      F.col("sample_rate").cast("int").alias("sample_rate"),
-                      F.col("n_samples").cast("long").alias("n_samples"),
-                      "duration_s", "rms",
-                      F.col("zero_crossings").cast("long")
-                      .alias("zero_crossings"))
-
-
-# RDFS-lite category hierarchy over the lexicon's categories — child is
-# subClassOf parent; a tree (one parent each), max depth 3.
-_ONTOLOGY: list[tuple[str, str]] = [
-    ("tool", "artifact"), ("artifact", "thing"),
-    ("method", "procedure"), ("procedure", "process"),
-    ("process", "thing"), ("concept", "abstraction"),
-    ("abstraction", "thing"), ("phenomenon", "process"),
-]
-
-_ONTOLOGY_VALUES = ", ".join(f"('{c}', '{p}')" for c, p in _ONTOLOGY)
-
-
-_ONTOLOGY_SQL = f"""
-WITH RECURSIVE hier(child, parent) AS (
-  VALUES {_ONTOLOGY_VALUES}
-), anc(cat, anc, d) AS (
-  SELECT child, parent, 1 FROM hier
-  UNION ALL
-  SELECT a.cat, h.parent, a.d + 1 FROM anc a JOIN hier h ON h.child = a.anc
-), lex AS (
-  SELECT term, category FROM {kg_docs.lexicon_values_sql()}
-)
-SELECT term, rtype, CAST(min(d) AS INTEGER) AS depth FROM (
-  SELECT term, category AS rtype, 0 AS d FROM lex
-  UNION ALL
-  SELECT lex.term, a.anc, a.d FROM lex JOIN anc a ON a.cat = lex.category
-) GROUP BY term, rtype
-"""
-
-
-@register("kg_ontology_closure", _ONTOLOGY_SQL)
-def kg_ontology_closure(spark, sf_dir):
-    """RDFS-style type inference: the lexicon's categories sit in a small
-    subClassOf hierarchy; every entity's asserted type is closed upward
-    through the TRANSITIVE closure (rdfs:subClassOf semantics — entity
-    type C and C ⊑ D entail type D), with depth = subsumption distance.
-    The closure is computed by the same semi-naive iteration a recursive
-    CTE runs (frontier ⋈ hierarchy until fixpoint) — driver-side,
-    because an ontology is SCHEMA-scale (8 subClassOf axioms here;
-    thousands at worst in production — never data-scale), then broadcast;
-    the ENTITY-side type expansion is one broadcast join. At a
-    10⁹-entity KG the same plan holds exactly because ontologies stay
-    schema-scale while entities scale — iterating the closure as
-    distributed jobs (tried first) spends ~100 s of scheduler overhead
-    to join 8 rows."""
-    # semi-naive closure on the axiom list; depth ≤ |hierarchy| guaranteed
-    anc = [(c, p, 1) for c, p in _ONTOLOGY]
-    parent = dict(_ONTOLOGY)
-    frontier = list(anc)
-    while frontier:
-        step = [(cat, parent[a], d + 1) for cat, a, d in frontier
-                if a in parent]
-        anc.extend(step)
-        frontier = step
-    anc = spark.createDataFrame(anc, "cat string, anc string, d int")
-    lex = kg_docs.lexicon_df(spark)
-    direct = lex.select("term", F.col("category").alias("rtype"),
-                        F.lit(0).alias("d"))
-    inferred = (lex.join(F.broadcast(anc),
-                         lex["category"] == anc["cat"])
-                .select("term", F.col("anc").alias("rtype"), "d"))
-    return (direct.unionAll(inferred)
-            .groupBy("term", "rtype")
-            .agg(F.min("d").cast("int").alias("depth")))
-
-
-_SHACL_SQL = f"""
-WITH m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), n AS (
-  SELECT term, count(*) AS n FROM m GROUP BY term
-), pairs AS (
-  SELECT a.term AS term_a, b.term AS term_b, count(*) AS common
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), e AS (
-  SELECT p.term_a, typ.pred, p.term_b, p.common,
-         CAST(p.common AS DOUBLE) / least(na.n, nb.n) AS strength,
-         least(1.0, CAST(p.common AS DOUBLE) / 10.0) AS confidence
-  FROM pairs p
-  JOIN n na ON na.term = p.term_a
-  JOIN n nb ON nb.term = p.term_b
-  JOIN {kg_docs.typing_values_sql()}
-    ON typ.term_a = p.term_a AND typ.term_b = p.term_b
-), deg AS (
-  SELECT term, count(*) AS degree FROM (
-    SELECT term_a AS term FROM e UNION ALL SELECT term_b FROM e
-  ) GROUP BY term
-), lexall AS (
-  SELECT term FROM {kg_docs.lexicon_values_sql()}
-)
-SELECT 'confidence_in_range' AS rule,
-       CAST(count(*) AS BIGINT) AS n_checked,
-       CAST(count(*) FILTER (WHERE confidence <= 0 OR confidence > 1)
-            AS BIGINT) AS n_violations,
-       min(term_a || '->' || term_b)
-           FILTER (WHERE confidence <= 0 OR confidence > 1) AS example
-FROM e
-UNION ALL
-SELECT 'strength_in_range', CAST(count(*) AS BIGINT),
-       CAST(count(*) FILTER (WHERE strength <= 0 OR strength > 1)
-            AS BIGINT),
-       min(term_a || '->' || term_b)
-           FILTER (WHERE strength <= 0 OR strength > 1)
-FROM e
-UNION ALL
-SELECT 'no_self_loop', CAST(count(*) AS BIGINT),
-       CAST(count(*) FILTER (WHERE term_a = term_b) AS BIGINT),
-       min(term_a) FILTER (WHERE term_a = term_b)
-FROM e
-UNION ALL
-SELECT 'min_support_3', CAST(count(*) AS BIGINT),
-       CAST(count(*) FILTER (WHERE common < 3) AS BIGINT),
-       min(term_a || '->' || term_b) FILTER (WHERE common < 3)
-FROM e
-UNION ALL
-SELECT 'isolated_term', CAST((SELECT count(*) FROM lexall) AS BIGINT),
-       CAST(count(*) AS BIGINT), min(l.term)
-FROM lexall l LEFT JOIN deg ON deg.term = l.term
-WHERE deg.term IS NULL
-UNION ALL
-SELECT 'hub_cardinality_10', CAST(count(*) AS BIGINT),
-       CAST(count(*) FILTER (WHERE degree > 10) AS BIGINT),
-       min(term) FILTER (WHERE degree > 10)
-FROM deg
-"""
-
-
-@register("kg_shacl_validation", _SHACL_SQL)
-def kg_shacl_validation(spark, sf_dir):
-    """SHACL-lite constraint validation over the constructed KG — the
-    graph-quality gate a production KG build runs before publishing a
-    snapshot: range shapes on edge properties (confidence/strength in
-    (0,1] — reference formulas graph_tools.py:220-228 guarantee them, so
-    these assert 0 violations), structural shapes (no self-loops,
-    minimum evidence support, no isolated lexicon terms, hub-degree cap)
-    that genuinely fire on this corpus. Each rule reports (checked,
-    violations, min example id). Plan: every rule folds to a conditional
-    aggregate over the memoized edge table + a vocabulary-sized degree
-    frame — validation never re-scans the corpus and a 10⁹-edge graph
-    pays one pass for the whole rule battery."""
-    e = _typed_edges(spark, sf_dir)
-    deg = (e.select(F.col("term_a").alias("term"))
-           .unionAll(e.select("term_b"))
-           .groupBy("term").agg(F.count(F.lit(1)).alias("degree")))
-    lex = kg_docs.lexicon_df(spark).select("term")
-
-    def rule_over_e(name, cond, example):
-        return e.agg(
-            F.lit(name).alias("rule"),
-            F.count(F.lit(1)).cast("long").alias("n_checked"),
-            F.sum(F.when(cond, 1).otherwise(0)).cast("long")
-            .alias("n_violations"),
-            F.min(F.when(cond, example)).alias("example"))
-
-    pair_id = F.concat("term_a", F.lit("->"), "term_b")
-    r1 = rule_over_e("confidence_in_range",
-                     (F.col("confidence") <= 0) | (F.col("confidence") > 1),
-                     pair_id)
-    r2 = rule_over_e("strength_in_range",
-                     (F.col("strength") <= 0) | (F.col("strength") > 1),
-                     pair_id)
-    r3 = rule_over_e("no_self_loop", F.col("term_a") == F.col("term_b"),
-                     F.col("term_a"))
-    r4 = rule_over_e("min_support_3", F.col("common") < 3, pair_id)
-    r5 = (lex.join(deg, "term", "left_anti")
-          .agg(F.lit("isolated_term").alias("rule"),
-               F.lit(len(kg_docs.DOC_LEXICON)).cast("long")
-               .alias("n_checked"),
-               F.count(F.lit(1)).cast("long").alias("n_violations"),
-               F.min("term").alias("example")))
-    r6 = deg.agg(
-        F.lit("hub_cardinality_10").alias("rule"),
-        F.count(F.lit(1)).cast("long").alias("n_checked"),
-        F.sum(F.when(F.col("degree") > 10, 1).otherwise(0)).cast("long")
-        .alias("n_violations"),
-        F.min(F.when(F.col("degree") > 10, F.col("term"))).alias("example"))
-    return r1.unionAll(r2).unionAll(r3).unionAll(r4).unionAll(r5) \
-             .unionAll(r6)
-
-
-_PROVENANCE_SQL = f"""
-WITH m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), pairs_doc AS (
-  SELECT a.term AS term_a, b.term AS term_b, a.doc_id
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-), tot AS (
-  SELECT term_a, term_b FROM pairs_doc
-  GROUP BY 1, 2 HAVING count(*) >= 2
-)
-SELECT p.term_a, typ.pred, p.term_b, d.source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(min(p.doc_id) AS BIGINT) AS first_doc,
-       CAST(max(p.doc_id) AS BIGINT) AS last_doc
-FROM pairs_doc p
-JOIN tot ON tot.term_a = p.term_a AND tot.term_b = p.term_b
-JOIN documents d ON d.doc_id = p.doc_id
-JOIN {kg_docs.typing_values_sql()}
-  ON typ.term_a = p.term_a AND typ.term_b = p.term_b
-GROUP BY 1, 2, 3, 4
-"""
-
-
-@register("kg_provenance_rollup", _PROVENANCE_SQL)
-def kg_provenance_rollup(spark, sf_dir):
-    """Per-triple provenance rollup — the docs-twin of the transcripts
-    pipeline's (conv_id, turn_idx) lineage (north-star requirement:
-    every emitted triple traces back to its evidence): each typed edge ×
-    evidence source gets its supporting-document count and first/last
-    doc anchors, so a KG consumer can audit WHICH slice of the corpus
-    asserts a relation and how support distributes across sources. Plan:
-    the per-doc pair explode (shuffle-free within doc), one semi-join
-    against qualifying pairs, a broadcast source lookup, one grouped
-    aggregate — provenance is a second aggregation over the SAME pair
-    rows the edge build shuffles, not a new corpus scan."""
-    d = _t(spark, sf_dir, "documents")
-    m = kg_docs.doc_mentions(spark, d).select("doc_id", "term").distinct()
-    a = m.select("doc_id", F.col("term").alias("term_a"))
-    b = m.select("doc_id", F.col("term").alias("term_b"))
-    pairs_doc = (a.join(b, "doc_id")
-                 .filter(F.col("term_a") < F.col("term_b")))
-    tot = (pairs_doc.groupBy("term_a", "term_b")
-           .agg(F.count(F.lit(1)).alias("common"))
-           .filter(F.col("common") >= 2).drop("common"))
-    typ = spark.createDataFrame(
-        [(ta, tb, kg_docs.resolved_type(ca, cb))
-         for ta, ca in kg_docs.DOC_LEXICON
-         for tb, cb in kg_docs.DOC_LEXICON],
-        "term_a string, term_b string, pred string")
-    return (pairs_doc
-            .join(F.broadcast(tot), ["term_a", "term_b"])
-            .join(d.select("doc_id", "source"), "doc_id")
-            .join(F.broadcast(typ), ["term_a", "term_b"])
-            .groupBy("term_a", "pred", "term_b", "source")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                 F.min("doc_id").cast("long").alias("first_doc"),
-                 F.max("doc_id").cast("long").alias("last_doc")))
-
-
-@register("kg_incremental_edges", _KG_COOCCUR_SQL)
-def kg_incremental_edges(spark, sf_dir):
-    """Incremental-view-maintenance identity for the KG edge build, as an
-    oracled BATCH surface (the streaming sibling lives in
-    streaming/stream.py's summary folding): the corpus is split into a
-    base partition (doc_id % 5 < 4) and a delta (doc_id % 5 = 4), the
-    engine maintains COUNT state per partition — pair co-occurrence
-    counts and per-term document frequencies, the only additively
-    mergeable quantities — merges with a full-outer sum, and only THEN
-    re-derives strength/confidence and applies the support threshold:
-    both are non-linear in the counts (min(nₐ,n_b) denominator,
-    saturation, HAVING), so maintaining derived values would be wrong.
-    The oracle recomputes edges directly over the whole corpus — the
-    identity incremental(base ⊎ delta) ≡ direct(full) is what the hash
-    checks. Plan: two partition-pruned aggregates + a vocabulary-sized
-    merge; at 10¹²-turn scale this is exactly the nightly-delta shape —
-    the base counts are a materialized snapshot, only the delta scans."""
-    d = _t(spark, sf_dir, "documents")
-    base = d.filter(F.col("doc_id") % 5 < 4)
-    delta = d.filter(F.col("doc_id") % 5 == 4)
-
-    def counts(docs):
-        m = (kg_docs.doc_mentions(spark, docs)
-             .select("doc_id", "term").distinct())
-        a = m.select("doc_id", F.col("term").alias("term_a"))
-        b = m.select("doc_id", F.col("term").alias("term_b"))
-        pairs = (a.join(b, "doc_id")
-                 .filter(F.col("term_a") < F.col("term_b"))
-                 .groupBy("term_a", "term_b")
-                 .agg(F.count(F.lit(1)).alias("common")))
-        nterm = m.groupBy("term").agg(F.count(F.lit(1)).alias("n"))
-        return pairs, nterm
-
-    pb, nb = counts(base)
-    pd_, nd = counts(delta)
-    # additive merge of the count state (full outer: a pair/term may be
-    # new in the delta or absent from it)
-    pairs = (pb.withColumnRenamed("common", "cb")
-             .join(pd_.withColumnRenamed("common", "cd"),
-                   ["term_a", "term_b"], "full_outer")
-             .select("term_a", "term_b",
-                     (F.coalesce("cb", F.lit(0))
-                      + F.coalesce("cd", F.lit(0))).alias("common")))
-    nterm = (nb.withColumnRenamed("n", "na")
-             .join(nd.withColumnRenamed("n", "nd"), "term", "full_outer")
-             .select("term", (F.coalesce("na", F.lit(0))
-                              + F.coalesce("nd", F.lit(0))).alias("n")))
-    qual = pairs.filter(F.col("common") >= kg_docs.MIN_COOCCURRENCES)
-    na = nterm.select(F.col("term").alias("term_a"),
-                      F.col("n").alias("n_a"))
-    nb2 = nterm.select(F.col("term").alias("term_b"),
-                       F.col("n").alias("n_b"))
-    return (qual.join(F.broadcast(na), "term_a")
-            .join(F.broadcast(nb2), "term_b")
-            .select("term_a", "term_b", "common",
-                    F.round(F.col("common")
-                            / F.least("n_a", "n_b"), 6).alias("strength"),
-                    F.round(F.least(F.lit(1.0), F.col("common") / 10.0), 6)
-                    .alias("confidence")))
-
-
-def _flac_fixture_sql(n: int = 24, seed: int = 42) -> str:
-    """Oracle for the FLAC STREAMINFO walk: every field is a pure formula
-    of (id, seed) (sources/audio_meta.flac_spec), re-derived here without
-    touching FLAC bytes — a wrong bit offset in the 20/3/5/36 group, a
-    missed last-block flag or an md5 slice error flips the hash."""
-    from knowledge_extraction_pipeline_spark.sources.audio_meta import (
-        flac_spec,
-    )
-    rows = []
-    for i in range(n):
-        rate, ch, bps, total, md5 = flac_spec(i, seed)
-        rows.append(f"({i}, {rate}, {ch}, {bps}, {total}, 2,"
-                    f" '{md5.hex()}')")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(sample_rate AS INTEGER) AS sample_rate,"
-            f" CAST(channels AS INTEGER) AS channels,"
-            f" CAST(bits_per_sample AS INTEGER) AS bits_per_sample,"
-            f" CAST(total_samples AS BIGINT) AS total_samples,"
-            f" CAST(n_blocks AS INTEGER) AS n_blocks, audio_md5"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, sample_rate, channels, bits_per_sample,"
-            f" total_samples, n_blocks, audio_md5)")
-
-
-@register("multimodal_flac_streaminfo", _flac_fixture_sql())
-def multimodal_flac_streaminfo(spark, sf_dir):
-    """FLAC STREAMINFO metadata parse (sources/audio_meta): metadata-
-    block walk honoring the last-block flag, the bit-packed
-    20-bit-rate / 3-bit-channels / 5-bit-bps / 36-bit-total field group
-    unpacked from the big-endian 64-bit word, embedded audio-MD5
-    extracted. Metadata-ONLY by honest scope (like the MP4 box walk —
-    the entropy-coded subframes need a codec lib this sandbox lacks),
-    but everything a corpus manifest needs is bit-exact."""
-    from .sources.audio_meta import extract_flac_info, synthetic_flac_media
-    out = extract_flac_info(synthetic_flac_media(spark, 24))
-    return out.select("media_id",
-                      F.col("sample_rate").cast("int").alias("sample_rate"),
-                      F.col("channels").cast("int").alias("channels"),
-                      F.col("bits_per_sample").cast("int")
-                      .alias("bits_per_sample"),
-                      F.col("total_samples").cast("long")
-                      .alias("total_samples"),
-                      F.col("n_blocks").cast("int").alias("n_blocks"),
-                      "audio_md5")
-
-
-def _mp3_fixture_sql(n: int = 21, seed: int = 42) -> str:
-    """Oracle for the MP3 frame walk: frame counts, durations and bitrate
-    sums re-derived from the same (id, j, seed) formulas
-    (sources/audio_meta.mp3_frame_spec) — a wrong bitrate/samplerate
-    table entry, a syncsafe-size slip in the ID3 skip or an off-by-one in
-    the padded frame-length advance desynchronizes the walk and flips
-    the hash."""
-    from knowledge_extraction_pipeline_spark.sources.audio_meta import (
-        MP3_BITRATES,
-        MP3_RATES,
-        mp3_frame_spec,
-    )
-    rows = []
-    for i in range(n):
-        rate_idx, frames = mp3_frame_spec(i, seed)
-        rate = MP3_RATES[rate_idx]
-        nf = len(frames)
-        sum_br = sum(MP3_BITRATES[b] for b, _ in frames)
-        vbr = int(len({b for b, _ in frames}) > 1)
-        dur = nf * 1152 * 1_000_000 // rate
-        rows.append(f"({i}, {rate}, {nf}, {dur}, {sum_br}, {vbr})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(sample_rate AS INTEGER) AS sample_rate,"
-            f" CAST(n_frames AS BIGINT) AS n_frames,"
-            f" CAST(duration_e6 AS BIGINT) AS duration_e6,"
-            f" CAST(sum_bitrate_kbps AS BIGINT) AS sum_bitrate_kbps,"
-            f" CAST(is_vbr AS INTEGER) AS is_vbr"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, sample_rate, n_frames, duration_e6,"
-            f" sum_bitrate_kbps, is_vbr)")
-
-
-@register("multimodal_mp3_frames", _mp3_fixture_sql())
-def multimodal_mp3_frames(spark, sf_dir):
-    """MPEG-1 Layer III (MP3) frame accounting
-    (sources/audio_meta.parse_mp3_frames): ID3v2 tag skipped via its
-    syncsafe size, then a sync-word frame walk decoding the real
-    bitrate/samplerate index tables and advancing by the padded frame
-    length 144·bitrate/rate + pad — frame count, exact-integer duration
-    (1152 samples/frame), bitrate sum and VBR detection. The frame
-    payloads stay opaque (honest scope: Huffman-coded granules need a
-    codec lib); the header walk is the part a shard manifest needs."""
-    from .sources.audio_meta import extract_mp3_frames, synthetic_mp3_media
-    out = extract_mp3_frames(synthetic_mp3_media(spark, 21))
-    return out.select("media_id",
-                      F.col("sample_rate").cast("int").alias("sample_rate"),
-                      F.col("n_frames").cast("long").alias("n_frames"),
-                      F.col("duration_e6").cast("long").alias("duration_e6"),
-                      F.col("sum_bitrate_kbps").cast("long")
-                      .alias("sum_bitrate_kbps"),
-                      F.col("is_vbr").cast("int").alias("is_vbr"))
-
-
-_PH_DELTA_E6 = 500_000          # drift dead-band δ = 0.5 events/day
-_PH_LAMBDA_E6 = 50_000_000      # alarm threshold λ = 50
-
-
-_PAGE_HINKLEY_SQL = f"""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-), run AS (
-  SELECT d, x,
-         sum(x) OVER (ORDER BY d) AS s,
-         CAST(row_number() OVER (ORDER BY d) AS BIGINT) AS t
-  FROM daily
-), term AS (
-  SELECT d, x,
-         x * 1000000 - CAST(s * 1000000 // t AS BIGINT)
-             - {_PH_DELTA_E6} AS term_e6
-  FROM run
-), cum AS (
-  SELECT d, x, sum(term_e6) OVER (ORDER BY d) AS m_e6 FROM term
-), ph AS (
-  SELECT d, x, m_e6, min(m_e6) OVER (ORDER BY d) AS mmin_e6 FROM cum
-)
-SELECT d, x, CAST(m_e6 AS BIGINT) AS m_e6,
-       CAST(m_e6 - mmin_e6 AS BIGINT) AS gap_e6,
-       CAST(CASE WHEN m_e6 - mmin_e6 > {_PH_LAMBDA_E6} THEN 1 ELSE 0 END
-            AS INTEGER) AS alarm
-FROM ph
-"""
-
-
-@register("q_events_page_hinkley", _PAGE_HINKLEY_SQL)
-def q_events_page_hinkley(spark, sf_dir):
-    """Page-Hinkley sequential drift detector over the daily event-volume
-    series (the monitoring-side sibling of q_events_cusum): the PH
-    statistic m_T = Σ(x_t − x̄_t − δ) uses the RUNNING mean x̄_t = S_t/t,
-    e6-floored once per term (one integer quotient each — both engines
-    floor the same exact ratio), the running minimum M_T is a cumulative
-    min window, and the alarm fires when m_T − M_T > λ. δ=0.5/day
-    dead-band, λ=50. Plan: one daily aggregate then three ordered windows
-    over the day-count-sized series — the corpus scan is the whole cost;
-    the detector itself is calendar-scale."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast("long").alias("x")))
-    w = Window.orderBy("d")
-    run = daily.select(
-        "d", "x", F.sum("x").over(w).alias("s"),
-        F.row_number().over(w).cast("long").alias("t"))
-    term = run.select(
-        "d", "x",
-        (F.col("x") * 1_000_000
-         - F.expr("CAST(s * 1000000 div t AS BIGINT)")
-         - _PH_DELTA_E6).alias("term_e6"))
-    ph = term.select(
-        "d", "x", F.sum("term_e6").over(w).alias("m_e6"))
-    ph = ph.select(
-        "d", "x", "m_e6", F.min("m_e6").over(w).alias("mmin_e6"))
-    return ph.select(
-        "d", "x", F.col("m_e6").cast("long").alias("m_e6"),
-        (F.col("m_e6") - F.col("mmin_e6")).cast("long").alias("gap_e6"),
-        F.when(F.col("m_e6") - F.col("mmin_e6") > _PH_LAMBDA_E6, 1)
-        .otherwise(0).cast("int").alias("alarm"))
-
-
-_GRUBBS_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS HUGEINT) AS x
-  FROM events GROUP BY 1
-), agg AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS s, sum(x * x) AS ss
-  FROM daily
-), dev AS (
-  SELECT d.d, d.x, abs(a.n * d.x - a.s) AS adev, a.n, a.s, a.ss
-  FROM daily d CROSS JOIN agg a
-), top AS (
-  SELECT d, x, adev, n, s, ss,
-         row_number() OVER (ORDER BY adev DESC, d) AS rn
-  FROM dev
-)
-SELECT CAST(n AS BIGINT) AS n_days, d AS max_dev_day,
-       CAST(x AS BIGINT) AS x_outlier,
-       CAST(adev * adev * (n - 1) * 1000000
-            // (n * (n * ss - s * s)) AS BIGINT) AS g2_e6
-FROM top WHERE rn = 1
-"""
-
-
-@register("q_events_grubbs", _GRUBBS_SQL)
-def q_events_grubbs(spark, sf_dir):
-    """Grubbs' maximum-studentized-deviate outlier statistic on the daily
-    event volumes, fraction-free: with dev = N·x − S the identity
-    G² = dev²(N−1) / (N(N·Σx² − S²)) clears the mean and the sample
-    variance of every division, so one exact integer quotient (e6) is the
-    only rounding and the argmax day is tie-broken by date. Complements
-    q_events_tukey_fences (robust fences) with the parametric
-    extreme-deviate test. Plan: one daily aggregate, one 3-cell
-    reduction broadcast back, one top-1 window over day-count rows."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast(dec).alias("x")))
-    agg = daily.agg(F.count(F.lit(1)).cast(dec).alias("n"),
-                    F.sum("x").alias("s"),
-                    F.sum(F.col("x") * F.col("x")).alias("ss"))
-    dev = (daily.crossJoin(F.broadcast(agg))
-           .select("d", "x", "n", "s", "ss",
-                   F.abs(F.col("n") * F.col("x") - F.col("s"))
-                   .alias("adev")))
-    w = Window.orderBy(F.desc("adev"), F.asc("d"))
-    top = dev.withColumn("rn", F.row_number().over(w)) \
-             .filter(F.col("rn") == 1)
-    return top.select(
-        F.col("n").cast("long").alias("n_days"),
-        F.col("d").alias("max_dev_day"),
-        F.col("x").cast("long").alias("x_outlier"),
-        F.expr("CAST(adev * adev * (n - 1) * 1000000"
-               " div (n * (n * ss - s * s)) AS BIGINT)").alias("g2_e6"))
-
-
-_KZ_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-), p1 AS (
-  SELECT d, x,
-         CASE WHEN count(*) OVER w = 5 THEN sum(x) OVER w END AS y1
-  FROM daily
-  WINDOW w AS (ORDER BY d ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)
-), p2 AS (
-  SELECT d, x, y1,
-         CASE WHEN count(y1) OVER w = 5 THEN sum(y1) OVER w END AS y2
-  FROM p1
-  WINDOW w AS (ORDER BY d ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)
-), p3 AS (
-  SELECT d, x, y2,
-         CASE WHEN count(y2) OVER w = 5 THEN sum(y2) OVER w END AS y3
-  FROM p2
-  WINDOW w AS (ORDER BY d ROWS BETWEEN 2 PRECEDING AND 2 FOLLOWING)
-)
-SELECT d, x, CAST(y3 AS BIGINT) AS y3_num,
-       CAST(y3 * 1000000 // 125 AS BIGINT) AS kz_e6
-FROM p3 WHERE y3 IS NOT NULL
-"""
-
-
-@register("q_events_kz_filter", _KZ_SQL)
-def q_events_kz_filter(spark, sf_dir):
-    """Kolmogorov-Zurbenko KZ(5,3) low-pass filter on the daily event
-    series — three iterations of a 5-point moving average, kept exact by
-    deferring EVERY division: pass k carries the raw neighbor sums (the
-    running numerator over denominator 5^k), full-support windows only
-    (edge rows where the window is short go NULL and propagate, exactly
-    the interior-only KZ definition over the observed row series), and
-    the final value is one e6-floored quotient by 125. The classic
-    smoother for separating synoptic signal from noise in monitoring
-    series. Plan: one daily aggregate, three row-frame windows over the
-    calendar-sized series."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast("long").alias("x")))
-    w = Window.orderBy("d").rowsBetween(-2, 2)
-    p1 = daily.select(
-        "d", "x",
-        F.when(F.count(F.lit(1)).over(w) == 5, F.sum("x").over(w))
-        .alias("y1"))
-    p2 = p1.select(
-        "d", "x", "y1",
-        F.when(F.count("y1").over(w) == 5, F.sum("y1").over(w))
-        .alias("y2"))
-    p3 = p2.select(
-        "d", "x", "y2",
-        F.when(F.count("y2").over(w) == 5, F.sum("y2").over(w))
-        .alias("y3"))
-    return (p3.filter(F.col("y3").isNotNull())
-            .select("d", "x", F.col("y3").cast("long").alias("y3_num"),
-                    F.expr("CAST(y3 * 1000000 div 125 AS BIGINT)")
-                    .alias("kz_e6")))
-
-
-_QL_MU = 2000
-_QL_TERMS = ("spark", "join", "vector")
-
-
-def _ql_dirichlet_sql(terms=_QL_TERMS, mu=_QL_MU, k=20) -> str:
-    tl = ", ".join(f"'{t}'" for t in terms)
-    return f"""
-WITH base AS (
-  SELECT doc_id, list_filter(string_split_regex(lower(trim(text)), '\\s+'),
-                             w -> w != '') AS words
-  FROM documents
-), dl AS (
-  SELECT doc_id, CAST(len(words) AS BIGINT) AS dl FROM base
-), tok AS (
-  SELECT doc_id, unnest(words) AS token FROM base
-), coll AS (
-  SELECT CAST(count(*) AS BIGINT) AS csize FROM tok
-), cf AS (
-  SELECT token, CAST(count(*) AS BIGINT) AS cf FROM tok
-  WHERE token IN ({tl}) GROUP BY token
-), tf AS (
-  SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf FROM tok
-  WHERE token IN ({tl}) GROUP BY doc_id, token
-), grid AS (
-  SELECT dl.doc_id, dl.dl, cf.token, cf.cf,
-         coalesce(tf.tf, 0) AS tf, coll.csize
-  FROM dl CROSS JOIN cf CROSS JOIN coll
-  LEFT JOIN tf ON tf.doc_id = dl.doc_id AND tf.token = cf.token
-), contrib AS (
-  SELECT doc_id,
-         CAST(floor(ln(CAST(tf * csize + {mu} * cf AS DOUBLE)
-                       / CAST(csize * (dl + {mu}) AS DOUBLE))
-                    * 1000000000 + 0.5) AS BIGINT) AS c_e9
-  FROM grid
-), s AS (
-  SELECT doc_id, CAST(sum(c_e9) AS BIGINT) AS score_e9 FROM contrib
-  GROUP BY doc_id
-)
-SELECT doc_id, score_e9,
-       CAST(row_number() OVER (ORDER BY score_e9 DESC, doc_id) AS BIGINT)
-           AS rank
-FROM s ORDER BY score_e9 DESC, doc_id LIMIT {k}
-"""
-
-
-@register("search_ql_dirichlet", _ql_dirichlet_sql())
-def search_ql_dirichlet(spark, sf_dir):
-    """Dirichlet-smoothed query-likelihood ranking (Zhai & Lafferty 2001)
-    — the language-modeling retrieval family next to search_bm25
-    (probabilistic) and tfidf (vector-space): score(q,d) =
-    Σ_w ln((tf + μ·cf_w/|C|)/(dl + μ)), cleared to the exact integer
-    ratio (tf·|C| + μ·cf_w)/(|C|·(dl + μ)) and e9-floored once per
-    (doc, term) — the text_naive_bayes_lang log discipline — then summed
-    exactly; μ=2000. Every doc scores every query term (smoothing gives
-    absent terms mass), so the grid is |docs|×|q| rows from ONE token
-    aggregate — no second corpus scan. Top-20 by (score, doc_id)."""
-    d = _t(spark, sf_dir, "documents")
-    terms = list(_QL_TERMS)
-    words = F.expr(
-        r"filter(split(lower(trim(text)), '\\s+'), w -> w != '')")
-    base = d.select("doc_id", words.alias("words"))
-    dl = base.select("doc_id", F.size("words").cast("long").alias("dl"))
-    tok = base.select("doc_id", F.explode("words").alias("token"))
-    coll = tok.agg(F.count(F.lit(1)).cast("long").alias("csize"))
-    qtok = tok.filter(F.col("token").isin(terms))
-    cf = qtok.groupBy("token").agg(F.count(F.lit(1)).cast("long")
-                                   .alias("cf"))
-    tf = qtok.groupBy("doc_id", "token").agg(
-        F.count(F.lit(1)).cast("long").alias("tf"))
-    grid = (dl.crossJoin(F.broadcast(cf)).crossJoin(F.broadcast(coll))
-            .join(tf, ["doc_id", "token"], "left")
-            .select("doc_id", "dl", "token", "cf", "csize",
-                    F.coalesce("tf", F.lit(0)).alias("tf")))
-    contrib = grid.select("doc_id", F.expr(
-        f"CAST(floor(ln(CAST(tf * csize + {_QL_MU} * cf AS DOUBLE)"
-        f" / CAST(csize * (dl + {_QL_MU}) AS DOUBLE))"
-        f" * 1000000000 + 0.5) AS BIGINT)").alias("c_e9"))
-    s = contrib.groupBy("doc_id").agg(
-        F.sum("c_e9").cast("long").alias("score_e9"))
-    w = Window.orderBy(F.desc("score_e9"), F.asc("doc_id"))
-    return (s.withColumn("rank", F.row_number().over(w).cast("long"))
-            .orderBy(F.desc("score_e9"), F.asc("doc_id")).limit(20))
-
-
-_TB_CAP_E6 = 5_000_000      # bucket capacity: 5 tokens
-_TB_RATE_PER_HOUR = 1       # refill: 1 token / hour
-_TB_COST_E6 = 1_000_000     # 1 token per event
-
-
-_TOKEN_BUCKET_SQL = f"""
-WITH RECURSIVE ev AS (
-  SELECT user_id,
-         CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS sec,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY ts, event_id) AS rn
-  FROM events
-), nmax AS (
-  SELECT user_id, max(rn) AS n FROM ev GROUP BY user_id
-), st AS (
-  SELECT e.user_id, e.rn, e.sec,
-         CASE WHEN {_TB_CAP_E6} >= {_TB_COST_E6}
-              THEN {_TB_CAP_E6} - {_TB_COST_E6} ELSE {_TB_CAP_E6} END
-             AS tokens_e6,
-         CASE WHEN {_TB_CAP_E6} >= {_TB_COST_E6} THEN 1 ELSE 0 END
-             AS accepted
-  FROM ev e WHERE e.rn = 1
-  UNION ALL
-  SELECT e.user_id, e.rn, e.sec,
-         CASE WHEN least({_TB_CAP_E6}, st.tokens_e6
-                         + (e.sec - st.sec) * 1000000 // 3600)
-                   >= {_TB_COST_E6}
-              THEN least({_TB_CAP_E6}, st.tokens_e6
-                         + (e.sec - st.sec) * 1000000 // 3600)
-                   - {_TB_COST_E6}
-              ELSE least({_TB_CAP_E6}, st.tokens_e6
-                         + (e.sec - st.sec) * 1000000 // 3600) END,
-         st.accepted + CASE WHEN least({_TB_CAP_E6}, st.tokens_e6
-                            + (e.sec - st.sec) * 1000000 // 3600)
-                            >= {_TB_COST_E6} THEN 1 ELSE 0 END
-  FROM st JOIN ev e ON e.user_id = st.user_id AND e.rn = st.rn + 1
-)
-SELECT st.user_id, CAST(nmax.n AS BIGINT) AS n_events,
-       CAST(st.accepted AS BIGINT) AS n_accepted,
-       CAST(st.tokens_e6 AS BIGINT) AS final_tokens_e6
-FROM st JOIN nmax ON nmax.user_id = st.user_id AND nmax.n = st.rn
-"""
-
-
-@register("q_events_token_bucket", _TOKEN_BUCKET_SQL)
-def q_events_token_bucket(spark, sf_dir):
-    """Token-bucket admission control replayed over each user's event
-    stream
-    — the custom STATEFUL sequential operator exercised through
-    applyInPandas (per-user Arrow group, plain integer loop: capacity 5
-    tokens, 1 token/hour refill, 1 token per event, refills floored at
-    e6 per gap) against a recursive-CTE replay in the oracle. The
-    min-cap recurrence is non-linear, so no window algebra expresses it
-    — this IS the case where the Pandas-UDF path is the right tool, and
-    the per-user grouping is exactly the partitioning a 10⁹-user replay
-    shards on (state never leaves the group). Output: per-user admitted
-    counts + final bucket level."""
-    import pandas as pd
-
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", F.unix_timestamp("ts").alias("sec"), "event_id")
-
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["sec", "event_id"], kind="mergesort")
-        tokens = _TB_CAP_E6
-        accepted = 0
-        prev = None
-        for sec in pdf["sec"]:
-            if prev is not None:
-                tokens = min(_TB_CAP_E6,
-                             tokens + (int(sec) - prev) * 1_000_000 // 3600)
-            if tokens >= _TB_COST_E6:
-                tokens -= _TB_COST_E6
-                accepted += 1
-            prev = int(sec)
-        return pd.DataFrame([(pdf["user_id"].iloc[0], len(pdf),
-                              accepted, tokens)],
-                            columns=["user_id", "n_events", "n_accepted",
-                                     "final_tokens_e6"])
-
-    return e.groupBy("user_id").applyInPandas(
-        replay, schema="user_id long, n_events long, n_accepted long,"
-                       " final_tokens_e6 long")
-
-
-_RPQ_SQL = f"""
-WITH m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), pairs AS (
-  SELECT a.term AS term_a, b.term AS term_b, count(*) AS common
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), te AS (
-  SELECT p.term_a, typ.pred, p.term_b
-  FROM pairs p
-  JOIN {kg_docs.typing_values_sql()}
-    ON typ.term_a = p.term_a AND typ.term_b = p.term_b
-), und AS (
-  SELECT term_a AS src, pred, term_b AS dst FROM te
-  UNION ALL
-  SELECT term_b, pred, term_a FROM te
-), uses AS (SELECT src, dst FROM und WHERE pred = 'USES'),
-rel AS (SELECT src, dst FROM und WHERE pred = 'RELATED_TO'),
-l1 AS (SELECT src AS x, dst AS z FROM uses),
-l2 AS (
-  SELECT u.src AS x, r.dst AS z FROM uses u JOIN rel r ON r.src = u.dst
-  WHERE r.dst != u.src
-), l3 AS (
-  SELECT u.src AS x, r2.dst AS z
-  FROM uses u JOIN rel r1 ON r1.src = u.dst
-  JOIN rel r2 ON r2.src = r1.dst
-  WHERE r1.dst != u.src AND r2.dst != r1.src AND r2.dst != u.src
-)
-SELECT x, z, CAST(min(len) AS INTEGER) AS min_len FROM (
-  SELECT x, z, 1 AS len FROM l1
-  UNION ALL SELECT x, z, 2 FROM l2
-  UNION ALL SELECT x, z, 3 FROM l3
-) WHERE x != z GROUP BY x, z
-"""
-
-
-@register("kg_rpq_paths", _RPQ_SQL)
-def kg_rpq_paths(spark, sf_dir):
-    """Regular-path query (SPARQL property-path semantics) over the
-    typed KG: evaluate `x -USES-> ·(-RELATED_TO->){{0,2}} z` on the
-    undirected typed edge set — the automaton is unrolled into three
-    bounded join chains (len 1, 2, 3) with non-backtracking guards, and
-    endpoints report their SHORTEST satisfying path length. The
-    property-path counterpart of kg_metapath_counts_docs (which counts
-    fixed-length category metapaths). Plan: the memoized edge table
-    split by predicate once, then vocabulary-scale joins — at graph
-    scale each chain step is one equi-join on the frontier, the same
-    shape as the k-hop operator."""
-    te = _typed_edges(spark, sf_dir).select("term_a", "pred", "term_b")
-    und = (te.select(F.col("term_a").alias("src"), "pred",
-                     F.col("term_b").alias("dst"))
-           .unionAll(te.select("term_b", "pred", "term_a")))
-    uses = und.filter(F.col("pred") == "USES").select("src", "dst")
-    rel = und.filter(F.col("pred") == "RELATED_TO").select("src", "dst")
-    l1 = uses.select(F.col("src").alias("x"), F.col("dst").alias("z"),
-                     F.lit(1).alias("len"))
-    u = uses.select(F.col("src").alias("x"), F.col("dst").alias("h1"))
-    r1 = rel.select(F.col("src").alias("h1"), F.col("dst").alias("h2"))
-    l2 = (u.join(r1, "h1").filter(F.col("h2") != F.col("x"))
-          .select("x", F.col("h2").alias("z"), F.lit(2).alias("len")))
-    r2 = rel.select(F.col("src").alias("h2"), F.col("dst").alias("h3"))
-    l3 = (u.join(r1, "h1").filter(F.col("h2") != F.col("x"))
-          .join(r2, "h2")
-          .filter((F.col("h3") != F.col("h1"))
-                  & (F.col("h3") != F.col("x")))
-          .select("x", F.col("h3").alias("z"), F.lit(3).alias("len")))
-    return (l1.unionAll(l2).unionAll(l3)
-            .filter(F.col("x") != F.col("z"))
-            .groupBy("x", "z")
-            .agg(F.min("len").cast("int").alias("min_len")))
-
-
-def _cpm_sql(min_cooc: int = 2, n_rounds: int = 12) -> str:
-    """Clique-percolation oracle: 3-cliques from oriented joins, overlap
-    edges between triangles sharing an edge, then the same unrolled
-    min-label CC recurrence _components_sql uses — over TRIANGLE ids."""
-    head = f"""
-WITH m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= {min_cooc}
-), tri AS MATERIALIZED (
-  SELECT e1.a, e1.b, e2.b AS c,
-         e1.a || '|' || e1.b || '|' || e2.b AS tid
-  FROM e e1 JOIN e e2 ON e2.a = e1.b
-  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-), trie AS MATERIALIZED (
-  SELECT tid, a || '|' || b AS ed FROM tri
-  UNION ALL SELECT tid, a || '|' || c FROM tri
-  UNION ALL SELECT tid, b || '|' || c FROM tri
-), ov AS MATERIALIZED (
-  SELECT DISTINCT x.tid AS a, y.tid AS b
-  FROM trie x JOIN trie y ON x.ed = y.ed AND x.tid < y.tid
-), bd AS MATERIALIZED (
-  SELECT a AS node, b AS nbr FROM ov UNION SELECT b, a FROM ov
-), nodes AS MATERIALIZED (SELECT DISTINCT tid AS node FROM tri),
-l0 AS (SELECT node, node AS lbl FROM nodes)"""
-    steps = []
-    for i in range(1, n_rounds + 1):
-        p = f"l{i - 1}"
-        steps.append(f""",
-l{i} AS MATERIALIZED (
-  SELECT nd.node, least(s.lbl, coalesce(nb.mn, s.lbl)) AS lbl
-  FROM nodes nd
-  JOIN {p} s ON s.node = nd.node
-  LEFT JOIN (SELECT bd.node, min(pv.lbl) AS mn
-             FROM bd JOIN {p} pv ON pv.node = bd.nbr
-             GROUP BY bd.node) nb ON nb.node = nd.node
-)""")
-    tail = f""",
-asn AS (SELECT node AS tid, lbl AS community FROM l{n_rounds}),
-members AS (
-  SELECT DISTINCT asn.community, x.term AS node
-  FROM asn JOIN tri ON tri.tid = asn.tid
-  CROSS JOIN LATERAL (VALUES (tri.a), (tri.b), (tri.c)) x(term)
-)
-SELECT community, node,
-       CAST(count(*) OVER (PARTITION BY community) AS BIGINT)
-           AS community_size
-FROM members"""
-    return head + "".join(steps) + tail
-
-
-@register("kg_clique_percolation", _cpm_sql())
-def kg_clique_percolation(spark, sf_dir):
-    """Clique-percolation (CPM, Palla et al. Nature 2005) OVERLAPPING
-    communities at k=3: adjacent triangles (sharing an edge) percolate
-    into one community, and a node belongs to every community whose
-    triangles contain it — the overlapping counterpart of the
-    partition-style kg_communities_docs. Engine path: oriented-join
-    triangle enumeration (the kg_triangles_docs shape), a triangle-
-    overlap graph keyed by sorted-pair edge ids, then the REAL
-    large-star/small-star CC operator over TRIANGLE ids (distributed
-    path forced); the oracle runs the unrolled min-label recurrence over
-    the same overlap graph. Plan: triangle enumeration is the dominant
-    join at scale (degree-ordered orientation bounds it), the overlap
-    join is per-edge grouped, CC is the iterated-join operator — all
-    vocabulary-projected here, all the same shapes a web-scale CPM
-    uses."""
-    from .operators.canonicalize import connected_components
-    e = _cooc_edges(spark, sf_dir, 2).select(
-        F.col("term_a").alias("a"), F.col("term_b").alias("b"))
-    e1 = e.select(F.col("a"), F.col("b"))
-    e2 = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    e3 = e.select(F.col("a").alias("a2"), F.col("b").alias("c2"))
-    tri = (e1.join(e2, "b")
-           .join(e3, (F.col("a") == F.col("a2"))
-                 & (F.col("c") == F.col("c2")))
-           .select("a", "b", "c",
-                   F.concat_ws("|", "a", "b", "c").alias("tid")))
-    trie = (tri.select("tid", F.concat_ws("|", "a", "b").alias("ed"))
-            .unionAll(tri.select("tid", F.concat_ws("|", "a", "c")))
-            .unionAll(tri.select("tid", F.concat_ws("|", "b", "c"))))
-    x = trie.select(F.col("tid").alias("tx"), "ed")
-    y = trie.select(F.col("tid").alias("ty"), "ed")
-    ov = (x.join(y, "ed").filter(F.col("tx") < F.col("ty"))
-          .select(F.col("tx").alias("src"), F.col("ty").alias("dst"))
-          .distinct())
-    # isolated triangles (no overlap) must still form singleton
-    # communities: seed the CC input with self-loops
-    asn = connected_components(
-        ov.unionAll(tri.select(F.col("tid").alias("src"),
-                               F.col("tid").alias("dst"))),
-        driver_threshold=0).select(
-        F.col("norm_term").alias("tid"), F.col("canon").alias("community"))
-    members = (tri.join(asn, "tid")
-               .select("community", F.explode(F.array("a", "b", "c"))
-                       .alias("node"))
-               .distinct())
-    wsz = Window.partitionBy("community")
-    return members.select(
-        "community", "node",
-        F.count(F.lit(1)).over(wsz).cast("long").alias("community_size"))
-
-
-def _rast_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the REAL Sun Raster decode path: pixels are pure
-    formulas of (x, y, id) (sources/multimodal.synthetic_rast_media) and
-    the channel means are recomputed in plain Python from the pattern —
-    no raster bytes, so a header-word slip, a missed 16-bit row pad or a
-    broken RLE escape (0x80,count,value / 0x80,0x00 literal) flips the
-    hash for the odd (byte-encoded) ids."""
-    rows = []
-    for i in range(n):
-        w = 14 + (i * 3 + seed) % 11
-        h = 12 + (i * 5 + seed) % 9
-        rsum = gsum = bsum = 0
-        for y in range(h):
-            for x in range(w):
-                rsum += ((x // 4) * 9 + y * 7 + i) % 256
-                gsum += ((x // 3) * 5 + y * 11 + i * 2) % 256
-                bsum += ((x // 5) * 3 + y + i * 13) % 256
-        npx = w * h
-        rows.append(f"({i}, {w}, {h}, {rsum / npx!r}, {gsum / npx!r},"
-                    f" {bsum / npx!r})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(r_mean AS DOUBLE) AS r_mean,"
-            f" CAST(g_mean AS DOUBLE) AS g_mean,"
-            f" CAST(b_mean AS DOUBLE) AS b_mean"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, r_mean, g_mean, b_mean)")
-
-
-@register("multimodal_rast_features", _rast_fixture_sql())
-def multimodal_rast_features(spark, sf_dir):
-    """REAL Sun Raster (.ras) decode end to end
-    (sources/multimodal.decode_rast): big-endian 8-word header walk,
-    16-bit row-pad strip, BGR→RGB, and for odd ids the Sun byte-encoded
-    RLE stream (0x80 escapes with the count+1 convention and the
-    0x80,0x00 literal case) — the 15th real codec in the multimodal
-    family, checked against a pure-Python re-derivation of the channel
-    means from the pixel formulas."""
-    from .sources.multimodal import (
-        extract_image_features_real,
-        synthetic_rast_media,
-    )
-    out = extract_image_features_real(synthetic_rast_media(spark, 30))
-    return out.select("media_id", "width", "height",
-                      "r_mean", "g_mean", "b_mean")
-
-
-from .operators.sketches import hll_sql as _hll_union_base  # noqa: E402
-
-_HLL_UNION_SQL = f"""
-SELECT (SELECT CAST(count(DISTINCT event_type) AS BIGINT) FROM events)
-           AS n_groups_merged,
-       n_exact, hll_est, nonzero_registers, max_rank
-FROM ({_hll_union_base("events", "event_id")})
-"""
-
-
-@register("sketch_hll_union_events", _HLL_UNION_SQL)
-def sketch_hll_union_events(spark, sf_dir):
-    """HLL register-wise MAX merge — the union-mergeability claim of the
-    sketch family made into an oracled query: the ENGINE builds one HLL
-    register vector PER event_type and merges them by per-bucket max
-    (exactly what a 1000-executor rollup ships between partial
-    aggregates), while the ORACLE sketches the ungrouped stream directly;
-    max over a partition of the key set equals the global max per bucket,
-    so the merged estimate must be bit-identical to the direct one —
-    any merge bug (bucket misalignment, lost register, wrong rollup)
-    flips the hash. Same corrected-raw-HLL formula and exact scaled
-    harmonic sum as sketch_distinct_events."""
-    from .operators.sketches import HLL_P, _alpha, _hash_cols
-    e = _t(spark, sf_dir, "events")
-    m = 1 << HLL_P
-    keys = e.select("event_type", F.col("event_id").alias("_k")).distinct()
-    bucket, rank = _hash_cols(F.col("_k"), HLL_P)
-    hashed = keys.select("event_type", bucket.alias("_b"),
-                         rank.alias("_r"))
-    # per-GROUP register vectors, then the register-wise max merge
-    regs_g = hashed.groupBy("event_type", "_b").agg(F.max("_r").alias("_m"))
-    regs = regs_g.groupBy("_b").agg(F.max("_m").alias("_m"))
-    gmax = regs.agg(F.max("_m").alias("_rmax"))
-    joined = regs.crossJoin(F.broadcast(gmax))
-    term = F.pow(F.lit(2.0), F.col("_rmax") - F.col("_m")) \
-        .cast("decimal(38,0)")
-    hll = (joined.groupBy("_rmax")
-           .agg(F.sum(term).alias("_s_nz"),
-                F.count(F.lit(1)).cast("long").alias("nonzero_registers"))
-           .withColumn("_s", F.col("_s_nz")
-                       + (F.lit(m) - F.col("nonzero_registers"))
-                       * F.pow(F.lit(2.0), F.col("_rmax"))
-                       .cast("decimal(38,0)"))
-           .select(
-               F.round(F.lit(_alpha(m)) * (F.lit(float(m * m))
-                                           * F.pow(F.lit(2.0),
-                                                   F.col("_rmax")))
-                       / F.col("_s").cast("double"), 4).alias("hll_est"),
-               "nonzero_registers",
-               F.col("_rmax").cast("long").alias("max_rank")))
-    counts = e.agg(
-        F.countDistinct("event_type").cast("long").alias("n_groups_merged"),
-        F.countDistinct("event_id").cast("long").alias("n_exact"))
-    return counts.crossJoin(hll).select(
-        "n_groups_merged", "n_exact", "hll_est", "nonzero_registers",
-        "max_rank")
-
-
 _AUG_DROP_MOD = 10
 
 
@@ -23376,644 +6725,6 @@ def data_token_dropout_aug(spark, sf_dir):
         F.size(F.split("text", " ")).cast("long").alias("n_tokens"),
         F.size(ks).cast("long").alias("n_kept"),
         F.md5(F.array_join(ks, " ")).alias("aug_fingerprint"))
-
-
-def _xbm_fixture_sql(n: int = 24, seed: int = 42) -> str:
-    """Oracle for the XBM text-format parse: bit(x, y) is a pure formula
-    of (x, y, id), so set-bit counts are recomputed here without touching
-    the C source — a wrong LSB-first bit order, a missed row byte-pad or
-    a hex-token slip flips the hash."""
-    rows = []
-    for i in range(n):
-        w = 9 + (i * 3 + seed) % 14
-        h = 6 + (i * 5 + seed) % 9
-        nset = sum(1 for y in range(h) for x in range(w)
-                   if (x * 3 + y * 5 + i) % 7 == 0)
-        dens = nset * 1_000_000 // (w * h)
-        rows.append(f"({i}, {w}, {h}, {nset}, {dens})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(n_set AS BIGINT) AS n_set,"
-            f" CAST(density_e6 AS BIGINT) AS density_e6"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, n_set, density_e6)")
-
-
-@register("multimodal_xbm_features", _xbm_fixture_sql())
-def multimodal_xbm_features(spark, sf_dir):
-    """XBM (X BitMap) parse — the TEXT-embedded image format (C source:
-    #define width/height + a hex byte array, LSB-first bits, rows padded
-    to byte boundaries): genuine XBM sources are generated from pure
-    (x, y, id) bit formulas, parsed back by a hand-rolled tokenizer in
-    mapInPandas, and the set-bit census is checked against the formula
-    re-derivation. Rounds out the codec family with the one format that
-    ships as source code rather than bytes."""
-    import re as _re
-
-    import pandas as pd
-
-    def encode_xbm(i: int, w: int, h: int) -> str:
-        bpr = (w + 7) // 8
-        data = []
-        for y in range(h):
-            row = bytearray(bpr)
-            for x in range(w):
-                if (x * 3 + y * 5 + i) % 7 == 0:
-                    row[x // 8] |= 1 << (x % 8)      # LSB-first
-            data.extend(row)
-        hexes = ", ".join(f"0x{b:02x}" for b in data)
-        return (f"#define img{i}_width {w}\n#define img{i}_height {h}\n"
-                f"static unsigned char img{i}_bits[] = {{\n {hexes} }};\n")
-
-    rows = []
-    for i in range(24):
-        w = 9 + (i * 3 + 42) % 14
-        h = 6 + (i * 5 + 42) % 9
-        rows.append((i, "image", "image/x-xbitmap",
-                     bytearray(encode_xbm(i, w, h).encode("ascii")), {}))
-    from .sources.multimodal import MEDIA_SCHEMA
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-    def process(batches):
-        pat_w = _re.compile(r"#define\s+\w*_?width\s+(\d+)")
-        pat_h = _re.compile(r"#define\s+\w*_?height\s+(\d+)")
-        pat_b = _re.compile(r"0x([0-9a-fA-F]{1,2})")
-        for pdf in batches:
-            out = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                src = bytes(payload).decode("ascii")
-                w = int(pat_w.search(src).group(1))
-                h = int(pat_h.search(src).group(1))
-                data = [int(m, 16) for m in pat_b.findall(
-                    src[src.index("{"):])]
-                bpr = (w + 7) // 8
-                nset = 0
-                for y in range(h):
-                    for x in range(w):
-                        if data[y * bpr + x // 8] >> (x % 8) & 1:
-                            nset += 1
-                out.append((mid, w, h, nset, nset * 1_000_000 // (w * h)))
-            yield pd.DataFrame(out, columns=[
-                "media_id", "width", "height", "n_set", "density_e6"])
-
-    res = media.select("media_id", "payload").mapInPandas(
-        process, schema="media_id long, width int, height int,"
-                        " n_set long, density_e6 long")
-    return res
-
-
-_LITTLE_SQL = """
-WITH cyc AS (
-  -- greatest(): the synthetic lineitem dates can precede the order date;
-  -- clamp so every order is in-system for at least its arrival day
-  SELECT o.o_orderkey, CAST(o.o_orderdate AS DATE) AS od,
-         greatest(max(CAST(l.l_shipdate AS DATE)),
-                  CAST(o.o_orderdate AS DATE)) AS sd
-  FROM orders o JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-  GROUP BY 1, 2
-), days AS (
-  SELECT o_orderkey, od,
-         unnest(generate_series(od, sd, INTERVAL 1 DAY)) AS day
-  FROM cyc
-), wip AS (
-  SELECT date_trunc('month', CAST(day AS DATE)) AS mon,
-         CAST(count(*) AS BIGINT) AS order_days
-  FROM days GROUP BY 1
-), arr AS (
-  SELECT date_trunc('month', od) AS mon,
-         CAST(count(*) AS BIGINT) AS arrivals,
-         CAST(sum(date_diff('day', od, sd) + 1) AS BIGINT) AS sum_days
-  FROM cyc GROUP BY 1
-), dim AS (
-  SELECT mon, CAST(date_diff('day', mon,
-              mon + INTERVAL 1 MONTH) AS BIGINT) AS n_days
-  FROM (SELECT DISTINCT mon FROM wip)
-)
-SELECT CAST(w.mon AS DATE) AS mon, coalesce(a.arrivals, 0) AS arrivals,
-       CAST(w.order_days * 1000000 // d.n_days AS BIGINT) AS l_e6,
-       CAST(coalesce(a.arrivals, 0) * 1000000 // d.n_days AS BIGINT)
-           AS lambda_e6,
-       CAST(CASE WHEN coalesce(a.arrivals, 0) > 0
-                 THEN a.sum_days * 1000000 // a.arrivals ELSE 0 END
-            AS BIGINT) AS w_e6,
-       CAST(w.order_days * 1000000 // d.n_days
-            - (coalesce(a.arrivals, 0) * 1000000 // d.n_days)
-              * (CASE WHEN coalesce(a.arrivals, 0) > 0
-                      THEN a.sum_days * 1000000 // a.arrivals ELSE 0 END)
-              // 1000000 AS BIGINT) AS littles_gap_e6
-FROM wip w JOIN dim d ON d.mon = w.mon
-LEFT JOIN arr a ON a.mon = w.mon
-"""
-
-
-@register("q_orders_little_law", _LITTLE_SQL)
-def q_orders_little_law(spark, sf_dir):
-    """Little's law decomposition by month: each order is in-system from
-    o_orderdate to its last l_shipdate; L = time-averaged WIP (day-grid
-    order-days / days-in-month), λ = arrivals/day, W = mean inclusive
-    cycle time of that month's arrivals, and littles_gap = L − λW — the
-    identity holds exactly over the whole horizon but BREAKS monthly
-    because in-flight orders straddle month boundaries; the gap
-    quantifies that carry-over (the ops-analytics lens on the backlog
-    series). All quantities are e6-floored integer quotients. Plan: one
-    order↔lineitem grouped join, a bounded per-order day explode
-    (cycle-length rows — the documented cost), two calendar-scale
-    aggregates."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    cyc = (o.select("o_orderkey", F.col("o_orderdate").cast("date")
-                    .alias("od"))
-           .join(li.select(F.col("l_orderkey").alias("o_orderkey"),
-                           F.col("l_shipdate").cast("date").alias("sd")),
-                 "o_orderkey")
-           .groupBy("o_orderkey", "od")
-           .agg(F.greatest(F.max("sd"), F.first("od")).alias("sd")))
-    days = cyc.select(
-        "o_orderkey", "od",
-        F.explode(F.expr("sequence(od, sd, interval 1 day)")).alias("day"))
-    wip = (days.groupBy(F.date_trunc("month", F.col("day").cast("timestamp"))
-                        .cast("date").alias("mon"))
-           .agg(F.count(F.lit(1)).cast("long").alias("order_days")))
-    arr = (cyc.groupBy(F.date_trunc("month",
-                                    F.col("od").cast("timestamp"))
-                       .cast("date").alias("mon"))
-           .agg(F.count(F.lit(1)).cast("long").alias("arrivals"),
-                F.sum(F.datediff("sd", "od") + 1).cast("long")
-                .alias("sum_days")))
-    dim = wip.select(
-        "mon",
-        F.datediff(F.add_months(F.col("mon"), 1), F.col("mon"))
-        .cast("long").alias("n_days"))
-    out = (wip.join(dim, "mon")
-           .join(arr, "mon", "left")
-           .select("mon",
-                   F.coalesce("arrivals", F.lit(0)).alias("arrivals"),
-                   "order_days", "n_days",
-                   F.coalesce("sum_days", F.lit(0)).alias("sum_days")))
-    lam = F.expr("CAST(arrivals * 1000000 div n_days AS BIGINT)")
-    ww = F.expr("CAST(CASE WHEN arrivals > 0 THEN sum_days * 1000000"
-                " div arrivals ELSE 0 END AS BIGINT)")
-    ll = F.expr("CAST(order_days * 1000000 div n_days AS BIGINT)")
-    return out.select(
-        "mon", F.col("arrivals").cast("long").alias("arrivals"),
-        ll.alias("l_e6"), lam.alias("lambda_e6"), ww.alias("w_e6"),
-        (ll - F.expr(
-            "CAST((arrivals * 1000000 div n_days)"
-            " * (CASE WHEN arrivals > 0 THEN sum_days * 1000000"
-            " div arrivals ELSE 0 END) div 1000000 AS BIGINT)"))
-        .cast("long").alias("littles_gap_e6"))
-
-
-_PRED_FUN_SQL = f"""
-WITH m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), pairs AS (
-  SELECT a.term AS term_a, b.term AS term_b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), e AS (
-  SELECT typ.pred, p.term_a AS s, p.term_b AS o
-  FROM pairs p
-  JOIN {kg_docs.typing_values_sql()}
-    ON typ.term_a = p.term_a AND typ.term_b = p.term_b
-)
-SELECT pred, CAST(count(*) AS BIGINT) AS n_edges,
-       CAST(count(DISTINCT s) AS BIGINT) AS n_subjects,
-       CAST(count(DISTINCT o) AS BIGINT) AS n_objects,
-       CAST(count(DISTINCT s) * 1000000 // count(*) AS BIGINT)
-           AS functionality_e6,
-       CAST(count(DISTINCT o) * 1000000 // count(*) AS BIGINT)
-           AS inv_functionality_e6
-FROM e GROUP BY pred
-"""
-
-
-@register("kg_pred_functionality", _PRED_FUN_SQL)
-def kg_pred_functionality(spark, sf_dir):
-    """Predicate functionality profile — the PARIS alignment primitives
-    (Suchanek et al., VLDB 2012): per predicate, fun(r) =
-    |distinct subjects|/|edges| and its inverse — the signals an
-    ontology-alignment or schema-induction pass reads to decide whether
-    a relation behaves like a function (fun→1) or a many-many
-    association (fun→0). e6-exact integer quotients over the memoized
-    typed-edge table; one grouped aggregate, predicate-cardinality
-    output."""
-    e = _typed_edges(spark, sf_dir)
-    return (e.groupBy("pred")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_edges"),
-                 F.countDistinct("term_a").cast("long").alias("n_subjects"),
-                 F.countDistinct("term_b").cast("long").alias("n_objects"))
-            .select("pred", "n_edges", "n_subjects", "n_objects",
-                    F.expr("CAST(n_subjects * 1000000 div n_edges"
-                           " AS BIGINT)").alias("functionality_e6"),
-                    F.expr("CAST(n_objects * 1000000 div n_edges"
-                           " AS BIGINT)").alias("inv_functionality_e6")))
-
-
-_FD_COLS = [("o_custkey", "CAST(o_custkey AS VARCHAR)"),
-            ("o_orderstatus", "o_orderstatus"),
-            ("o_orderpriority", "o_orderpriority"),
-            ("order_month", "CAST(month(CAST(o_orderdate AS TIMESTAMP))"
-                            " AS VARCHAR)")]
-
-
-def _fd_sql() -> str:
-    parts = []
-    for lhs, lexpr in _FD_COLS:
-        for rhs, rexpr in _FD_COLS:
-            if lhs == rhs:
-                continue
-            parts.append(f"""
-SELECT '{lhs}' AS lhs, '{rhs}' AS rhs,
-       CAST(count(*) AS BIGINT) AS n_lhs,
-       CAST(sum(nrhs) AS BIGINT) AS n_pairs,
-       CAST(count(*) FILTER (WHERE nrhs > 1) AS BIGINT) AS n_violating,
-       CAST(CASE WHEN max(nrhs) = 1 THEN 1 ELSE 0 END AS INTEGER) AS holds
-FROM (SELECT {lexpr} AS l, count(DISTINCT {rexpr}) AS nrhs
-      FROM orders GROUP BY 1)""")
-        # noqa within loop: parts built per pair
-    return " UNION ALL ".join(parts)
-
-
-@register("q_orders_fd_profile", _fd_sql())
-def q_orders_fd_profile(spark, sf_dir):
-    """Functional-dependency discovery (TANE-style single-attribute
-    lattice level) over the orders table: for every ordered column pair
-    A→B, the per-A distinct-B census — FD holds iff every A value maps
-    to exactly one B; violating-key counts grade HOW broken a candidate
-    dependency is (the data-profiling signal schema inference and
-    normalization advisors read). 12 pair tests from four columns; each
-    is one grouped distinct-count, all map-side combinable; at warehouse
-    scale the level-1 lattice is |columns|² aggregates over one scan
-    each (or one scan total with grouping sets)."""
-    o = _t(spark, sf_dir, "orders")
-    cols = {
-        "o_custkey": F.col("o_custkey").cast("string"),
-        "o_orderstatus": F.col("o_orderstatus"),
-        "o_orderpriority": F.col("o_orderpriority"),
-        "order_month": F.month(F.col("o_orderdate").cast("timestamp"))
-        .cast("string"),
-    }
-    outs = []
-    for lhs in cols:
-        for rhs in cols:
-            if lhs == rhs:
-                continue
-            per = (o.select(cols[lhs].alias("l"), cols[rhs].alias("r"))
-                   .groupBy("l")
-                   .agg(F.countDistinct("r").alias("nrhs")))
-            outs.append(per.agg(
-                F.lit(lhs).alias("lhs"), F.lit(rhs).alias("rhs"),
-                F.count(F.lit(1)).cast("long").alias("n_lhs"),
-                F.sum("nrhs").cast("long").alias("n_pairs"),
-                F.sum(F.when(F.col("nrhs") > 1, 1).otherwise(0))
-                .cast("long").alias("n_violating"),
-                F.when(F.max("nrhs") == 1, 1).otherwise(0).cast("int")
-                .alias("holds")))
-    res = outs[0]
-    for x in outs[1:]:
-        res = res.unionAll(x)
-    return res
-
-
-_BLOCKQ_SQL = """
-WITH sh AS (
-  SELECT doc_id AS id, lang AS blk,
-         list_distinct([array_to_string(words[i:i+2], ' ')
-                        for i in range(1, greatest(len(words) - 2, 1) + 1)]) AS s
-  FROM (SELECT doc_id, lang,
-               string_split_regex(trim(lower(text)), '\\s+') AS words
-        FROM documents)
-), gold AS (
-  SELECT a.id AS id_a, b.id AS id_b
-  FROM sh a JOIN sh b ON a.blk = b.blk AND a.id < b.id
-  WHERE CAST(len(list_intersect(a.s, b.s)) AS DOUBLE)
-        / len(list_distinct(list_concat(a.s, b.s))) >= 0.1
-), keyed AS (
-  SELECT doc_id, lang, n_chars // 100 AS lb FROM documents
-), cand AS (
-  SELECT CAST(sum(n * (n - 1) // 2) AS BIGINT) AS n_candidates
-  FROM (SELECT lang, lb, count(*) AS n FROM keyed GROUP BY 1, 2)
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         CAST(count(*) * (count(*) - 1) // 2 AS BIGINT) AS n_total
-  FROM documents
-), cb AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_gold,
-         CAST(count(*) FILTER (
-           WHERE ka.lang = kb.lang AND ka.lb = kb.lb) AS BIGINT)
-             AS n_coblocked
-  FROM gold g
-  JOIN keyed ka ON ka.doc_id = g.id_a
-  JOIN keyed kb ON kb.doc_id = g.id_b
-)
-SELECT cb.n_gold, cb.n_coblocked,
-       CAST(CASE WHEN cb.n_gold > 0
-                 THEN cb.n_coblocked * 1000000 // cb.n_gold ELSE 0 END
-            AS BIGINT) AS pairs_completeness_e6,
-       cand.n_candidates, tot.n_total AS n_total_pairs,
-       CAST((tot.n_total - cand.n_candidates) * 1000000 // tot.n_total
-            AS BIGINT) AS reduction_ratio_e6
-FROM cb CROSS JOIN cand CROSS JOIN tot
-"""
-
-
-@register("dedup_blocking_quality", _BLOCKQ_SQL)
-def dedup_blocking_quality(spark, sf_dir):
-    """Blocking-scheme QUALITY metrics (the standard ER evaluation pair):
-    pairs-completeness = co-blocked fraction of the gold near-duplicate
-    pairs (3-gram Jaccard ≥ 0.1, the dedup_ngram_jaccard_docs truth),
-    and reduction ratio = 1 − candidates/all-pairs — for the
-    (lang, ⌊n_chars/100⌋) blocking key. Length bucketing CAN split true
-    near-dup pairs across buckets, so PC < 1 is a real measurement, not
-    a tautology; RR quantifies the quadratic work avoided. Complements
-    dedup_blocking_stats (pair-budget census) with the recall side.
-    Plan: the gold join is the documented O(block²) exact baseline; the
-    metrics themselves are two tiny aggregates."""
-    from .operators.dedup import ngram_jaccard_pairs
-    d = _t(spark, sf_dir, "documents")
-    gold = ngram_jaccard_pairs(d, threshold=0.1, k=3).select("id_a", "id_b")
-    keyed = d.select(F.col("doc_id"), "lang",
-                     (F.col("n_chars") / 100).cast("long").alias("lb"))
-    cand = (keyed.groupBy("lang", "lb").agg(F.count(F.lit(1)).alias("n"))
-            .agg(F.sum(F.expr("n * (n - 1) div 2")).cast("long")
-                 .alias("n_candidates")))
-    tot = d.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.expr("CAST(count(*) * (count(*) - 1) div 2 AS BIGINT)")
-        .alias("n_total"))
-    ka = keyed.select(F.col("doc_id").alias("id_a"),
-                      F.col("lang").alias("la"), F.col("lb").alias("ba"))
-    kb = keyed.select(F.col("doc_id").alias("id_b"),
-                      F.col("lang").alias("lb2"), F.col("lb").alias("bb"))
-    cb = (gold.join(ka, "id_a").join(kb, "id_b")
-          .agg(F.count(F.lit(1)).cast("long").alias("n_gold"),
-               F.sum(F.when((F.col("la") == F.col("lb2"))
-                            & (F.col("ba") == F.col("bb")), 1)
-                     .otherwise(0)).cast("long").alias("n_coblocked")))
-    return (cb.crossJoin(F.broadcast(cand)).crossJoin(F.broadcast(tot))
-            .select("n_gold", "n_coblocked",
-                    F.expr("CAST(CASE WHEN n_gold > 0 THEN n_coblocked"
-                           " * 1000000 div n_gold ELSE 0 END AS BIGINT)")
-                    .alias("pairs_completeness_e6"),
-                    "n_candidates",
-                    F.col("n_total").alias("n_total_pairs"),
-                    F.expr("CAST((n_total - n_candidates) * 1000000"
-                           " div n_total AS BIGINT)")
-                    .alias("reduction_ratio_e6")))
-
-
-_AMIE_SQL = f"""
-WITH m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), pairs AS (
-  SELECT a.term AS term_a, b.term AS term_b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), te AS (
-  SELECT typ.pred, p.term_a, p.term_b
-  FROM pairs p
-  JOIN {kg_docs.typing_values_sql()}
-    ON typ.term_a = p.term_a AND typ.term_b = p.term_b
-), und AS (
-  SELECT pred, term_a AS s, term_b AS o FROM te
-  UNION ALL SELECT pred, term_b, term_a FROM te
-), body AS (
-  SELECT DISTINCT b1.pred AS p1, b2.pred AS p2, b1.s AS x, b2.o AS z
-  FROM und b1 JOIN und b2 ON b2.s = b1.o
-  WHERE b1.s != b2.o AND b1.o != b1.s AND b2.o != b2.s
-), nbody AS (
-  SELECT p1, p2, CAST(count(*) AS BIGINT) AS n_body
-  FROM body GROUP BY 1, 2
-), supp AS (
-  SELECT b.p1, b.p2, h.pred AS p3, CAST(count(*) AS BIGINT) AS support
-  FROM body b JOIN und h ON h.s = b.x AND h.o = b.z
-  GROUP BY 1, 2, 3
-)
-SELECT s.p1, s.p2, s.p3, s.support, n.n_body,
-       CAST(s.support * 1000000 // n.n_body AS BIGINT) AS confidence_e6
-FROM supp s JOIN nbody n ON n.p1 = s.p1 AND n.p2 = s.p2
-"""
-
-
-@register("kg_amie_rules", _AMIE_SQL)
-def kg_amie_rules(spark, sf_dir):
-    """AMIE-style horn-rule mining over the typed KG (Galárraga et al.,
-    WWW 2013): for every length-2 body p1(x,y) ∧ p2(y,z) ⇒ p3(x,z),
-    support = |{(x,z)} satisfying body AND head| and standard confidence
-    = support / |body pairs| (e6 integer quotient) — the rule-quality
-    table a KG-completion pass ranks before materializing inferred
-    edges. Undirected predicate atoms (the typing table's canonical
-    orientation), non-degenerate variable guards. Plan: one 2-hop join
-    on the memoized edge table + one head semi-join — predicate-pair
-    grouped, vocabulary-projected here, and at web scale exactly the
-    AMIE join shape (body frontier ⋈ head index)."""
-    te = _typed_edges(spark, sf_dir).select("pred", "term_a", "term_b")
-    und = (te.select("pred", F.col("term_a").alias("s"),
-                     F.col("term_b").alias("o"))
-           .unionAll(te.select("pred", "term_b", "term_a")))
-    b1 = und.select(F.col("pred").alias("p1"), F.col("s").alias("x"),
-                    F.col("o").alias("y"))
-    b2 = und.select(F.col("pred").alias("p2"), F.col("s").alias("y"),
-                    F.col("o").alias("z"))
-    body = (b1.join(b2, "y")
-            .filter((F.col("x") != F.col("z"))
-                    & (F.col("y") != F.col("x"))
-                    & (F.col("y") != F.col("z")))
-            .select("p1", "p2", "x", "z").distinct())
-    nbody = body.groupBy("p1", "p2").agg(
-        F.count(F.lit(1)).cast("long").alias("n_body"))
-    head = und.select(F.col("pred").alias("p3"), F.col("s").alias("x"),
-                      F.col("o").alias("z"))
-    supp = (body.join(head, ["x", "z"])
-            .groupBy("p1", "p2", "p3")
-            .agg(F.count(F.lit(1)).cast("long").alias("support")))
-    return (supp.join(nbody, ["p1", "p2"])
-            .select("p1", "p2", "p3", "support", "n_body",
-                    F.expr("CAST(support * 1000000 div n_body AS BIGINT)")
-                    .alias("confidence_e6")))
-
-
-_PRICE_IDX_SQL = """
-WITH pm AS (
-  SELECT l.l_partkey AS pk,
-         date_trunc('month', CAST(o.o_orderdate AS DATE)) AS mon,
-         CAST(sum(CAST(floor(l.l_extendedprice * 100 + 0.5) AS HUGEINT))
-              AS HUGEINT) AS cents,
-         CAST(sum(CAST(l.l_quantity AS HUGEINT)) AS HUGEINT) AS qty
-  FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
-  GROUP BY 1, 2
-), up AS (
-  SELECT pk, mon, cents * 1000000 // qty AS price_e6, qty FROM pm
-), base AS (
-  SELECT pk, price_e6 AS p0, qty AS q0 FROM up
-  WHERE mon = (SELECT min(mon) FROM up)
-), cur AS (
-  SELECT up.mon, up.pk, up.price_e6 AS pm, up.qty AS qm, b.p0, b.q0
-  FROM up JOIN base b ON b.pk = up.pk
-  WHERE up.mon > (SELECT min(mon) FROM up)
-), idx AS (
-  SELECT mon, CAST(count(*) AS BIGINT) AS n_parts,
-         CAST(sum(pm * q0) * 1000000 // sum(p0 * q0) AS BIGINT)
-             AS laspeyres_e6,
-         CAST(sum(pm * qm) * 1000000 // sum(p0 * qm) AS BIGINT)
-             AS paasche_e6
-  FROM cur GROUP BY mon
-)
-SELECT CAST(mon AS DATE) AS mon, n_parts, laspeyres_e6, paasche_e6,
-       CAST(laspeyres_e6 * paasche_e6 AS BIGINT) AS fisher_sq_e12
-FROM idx
-"""
-
-
-@register("q_lineitem_price_indices", _PRICE_IDX_SQL)
-def q_lineitem_price_indices(spark, sf_dir):
-    """Laspeyres / Paasche / Fisher price indices of the part basket by
-    month vs the first month: per-(part, month) unit prices are
-    e6-floored integer quotients of exact cent/quantity sums, the two
-    index ratios are single e6 integer quotients over exact
-    price×quantity cross-products (base-weighted vs current-weighted),
-    and Fisher is carried SQUARED (L·P at e12) so no square root ever
-    forms — the economic index-number family for price-drift monitoring.
-    Plan: one grouped join, a broadcast base-month basket, one monthly
-    aggregate; only parts present in both baskets enter each ratio
-    (matched-sample convention)."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    dec = "decimal(38,0)"
-    pm = (li.join(o.select(F.col("o_orderkey").alias("l_orderkey"),
-                           "o_orderdate"), "l_orderkey")
-          .groupBy(F.col("l_partkey").alias("pk"),
-                   F.date_trunc("month", F.col("o_orderdate")
-                                 .cast("date").cast("timestamp"))
-                   .cast("date").alias("mon"))
-          .agg(F.sum(F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-                     .cast(dec)).alias("cents"),
-               F.sum(F.col("l_quantity").cast(dec)).alias("qty")))
-    up = pm.select("pk", "mon",
-                   F.expr("CAST(cents * 1000000 div qty AS DECIMAL(38,0))")
-                   .alias("price_e6"), "qty")
-    m0 = up.agg(F.min("mon").alias("m0"))
-    base = (up.crossJoin(F.broadcast(m0))
-            .filter(F.col("mon") == F.col("m0"))
-            .select("pk", F.col("price_e6").alias("p0"),
-                    F.col("qty").alias("q0")))
-    cur = (up.crossJoin(F.broadcast(m0))
-           .filter(F.col("mon") > F.col("m0"))
-           .join(F.broadcast(base), "pk"))
-    idx = (cur.groupBy("mon")
-           .agg(F.count(F.lit(1)).cast("long").alias("n_parts"),
-                F.expr("CAST(sum(price_e6 * q0) * 1000000"
-                       " div sum(p0 * q0) AS BIGINT)").alias("laspeyres_e6"),
-                F.expr("CAST(sum(price_e6 * qty) * 1000000"
-                       " div sum(p0 * qty) AS BIGINT)").alias("paasche_e6")))
-    return idx.select(
-        "mon", "n_parts", "laspeyres_e6", "paasche_e6",
-        (F.col("laspeyres_e6") * F.col("paasche_e6")).cast("long")
-        .alias("fisher_sq_e12"))
-
-
-_DELTA_WORDS = [t for t, _ in kg_docs.DOC_LEXICON]
-
-
-def _burrows_sql() -> str:
-    wl = ", ".join(f"'{w}'" for w in _DELTA_WORDS)
-    nw = len(_DELTA_WORDS)
-    return f"""
-WITH tok AS (
-  SELECT source, unnest(string_split(text, ' ')) AS w FROM documents
-), tot AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n FROM tok GROUP BY 1
-), f AS (
-  SELECT t.source, wl.w,
-         CAST(coalesce(c.c, 0) * 1000000 // t.n AS BIGINT) AS f_e6
-  FROM tot t
-  CROSS JOIN (SELECT unnest([{wl}]) AS w) wl
-  LEFT JOIN (SELECT source, w, CAST(count(*) AS BIGINT) AS c
-             FROM tok WHERE w IN ({wl}) GROUP BY 1, 2) c
-    ON c.source = t.source AND c.w = wl.w
-), stats AS (
-  SELECT w, CAST(count(*) AS BIGINT) AS s,
-         CAST(sum(f_e6) AS HUGEINT) AS sf,
-         CAST(sum(f_e6 * f_e6) AS HUGEINT) AS sff
-  FROM f GROUP BY w
-), var AS (
-  SELECT w, s, CAST(s * sff - sf * sf AS HUGEINT) AS num FROM stats
-), pairs AS (
-  SELECT a.source AS src_a, b.source AS src_b, a.w,
-         abs(a.f_e6 - b.f_e6) AS adf
-  FROM f a JOIN f b ON a.w = b.w AND a.source < b.source
-), terms AS (
-  SELECT p.src_a, p.src_b,
-         CAST(floor(CAST(p.adf * v.s AS DOUBLE) * 1000000.0
-                    / sqrt(CAST(v.num AS DOUBLE)) + 0.5) AS BIGINT)
-             AS t_e6
-  FROM pairs p JOIN var v ON v.w = p.w
-  WHERE v.num > 0
-)
-SELECT src_a, src_b,
-       CAST(sum(t_e6) // {nw} AS BIGINT) AS delta_e6
-FROM terms GROUP BY 1, 2
-"""
-
-
-@register("text_burrows_delta", _burrows_sql())
-def text_burrows_delta(spark, sf_dir):
-    """Burrows' Delta authorship/stylometry distance between sources
-    (Burrows 2002): per-source relative frequencies of the 15 marker
-    words (e6-floored integer ratios), population z-scores collapsed via
-    z_a − z_b = (f_a − f_b)/σ_w so Delta(a,b) = mean_w |f_a − f_b|/σ_w —
-    the only float is ONE sqrt of the exact integer variance numerator
-    per word, and each pair term is floored once at e6 before the exact
-    mean (adf·S·1e6 ≤ 2e13 < 2⁵³, so the double math is exact).
-    Zero-variance words drop (standard). Plan: one token aggregate, a
-    |sources|×|words| frequency grid, a source-pair join — all
-    vocabulary/source-scale after the scan."""
-    d = _t(spark, sf_dir, "documents")
-    nw = len(_DELTA_WORDS)
-    tok = d.select("source", F.explode(F.split("text", " ")).alias("w"))
-    tot = tok.groupBy("source").agg(F.count(F.lit(1)).cast("long")
-                                    .alias("n"))
-    wl = spark.createDataFrame([(w,) for w in _DELTA_WORDS], "w string")
-    cnt = (tok.filter(F.col("w").isin(_DELTA_WORDS))
-           .groupBy("source", "w")
-           .agg(F.count(F.lit(1)).cast("long").alias("c")))
-    f = (tot.crossJoin(F.broadcast(wl))
-         .join(cnt, ["source", "w"], "left")
-         .select("source", "w",
-                 F.expr("CAST(coalesce(c, 0) * 1000000 div n AS BIGINT)")
-                 .alias("f_e6")))
-    dec = "decimal(38,0)"
-    stats = f.groupBy("w").agg(
-        F.count(F.lit(1)).cast("long").alias("s"),
-        F.sum(F.col("f_e6").cast(dec)).alias("sf"),
-        F.sum((F.col("f_e6") * F.col("f_e6")).cast(dec)).alias("sff"))
-    var = stats.select(
-        "w", "s", (F.col("s") * F.col("sff") - F.col("sf") * F.col("sf"))
-        .alias("num"))
-    a = f.select(F.col("source").alias("src_a"), "w",
-                 F.col("f_e6").alias("fa"))
-    b = f.select(F.col("source").alias("src_b"), "w",
-                 F.col("f_e6").alias("fb"))
-    pairs = (a.join(b, "w").filter(F.col("src_a") < F.col("src_b"))
-             .select("src_a", "src_b", "w",
-                     F.abs(F.col("fa") - F.col("fb")).alias("adf")))
-    terms = (pairs.join(F.broadcast(var), "w")
-             .filter(F.col("num") > 0)
-             .select("src_a", "src_b", F.expr(
-                 "CAST(floor(CAST(adf * s AS DOUBLE) * 1000000.0"
-                 " / sqrt(CAST(num AS DOUBLE)) + 0.5) AS BIGINT)")
-                 .alias("t_e6")))
-    return (terms.groupBy("src_a", "src_b")
-            .agg(F.expr(f"CAST(sum(t_e6) div {nw} AS BIGINT)")
-                 .alias("delta_e6")))
 
 
 _FFD_SQL = r"""
@@ -24069,2974 +6780,6 @@ def data_pack_ffd(spark, sf_dir):
     from .operators.packing import pack_sequences_ffd
     return pack_sequences_ffd(_t(spark, sf_dir, "documents"),
                               max_tokens=512)
-
-
-def _pam_fixture_sql(n: int = 28, seed: int = 42) -> str:
-    """Oracle for the PAM (P7) decode path: pixels are pure formulas of
-    (x, y, id); grayscale rows replicate to three equal channel means
-    exactly like the decoder's replication."""
-    rows = []
-    for i in range(n):
-        w = 11 + (i * 7 + seed) % 13
-        h = 9 + (i * 3 + seed) % 11
-        if i % 4 == 0:
-            s = sum((x * 5 + y * 9 + i * 3) % 256
-                    for y in range(h) for x in range(w))
-            rs = gs = bs = s
-        else:
-            rs = sum((x * 2 + y * 13 + i) % 256
-                     for y in range(h) for x in range(w))
-            gs = sum((x * 11 + y * 3 + i * 5) % 256
-                     for y in range(h) for x in range(w))
-            bs = sum((x + y * 7 + i * 9) % 256
-                     for y in range(h) for x in range(w))
-        npx = w * h
-        rows.append(f"({i}, {w}, {h}, {rs / npx!r}, {gs / npx!r},"
-                    f" {bs / npx!r})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(r_mean AS DOUBLE) AS r_mean,"
-            f" CAST(g_mean AS DOUBLE) AS g_mean,"
-            f" CAST(b_mean AS DOUBLE) AS b_mean"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, r_mean, g_mean, b_mean)")
-
-
-@register("multimodal_pam_features", _pam_fixture_sql())
-def multimodal_pam_features(spark, sf_dir):
-    """NetPBM PAM (P7) decode end to end
-    (sources/multimodal.decode_pam): token-header walk to ENDHDR,
-    raw unpadded sample block, GRAYSCALE→RGB replication — the arbitrary
-    -map member of the NetPBM family next to the binary PPM path,
-    checked against a pure-Python re-derivation of the channel means."""
-    from .sources.multimodal import (
-        extract_image_features_real,
-        synthetic_pam_media,
-    )
-    out = extract_image_features_real(synthetic_pam_media(spark, 28))
-    return out.select("media_id", "width", "height",
-                      "r_mean", "g_mean", "b_mean")
-
-
-def _wl_kernel_sql(n_rounds: int = 3, min_cooc: int = 2) -> str:
-    """WL-subtree-kernel oracle: the 1-WL recoloring recurrence
-    (_wl_sql's exact string recipe) run over TWO snapshots — the base
-    partition (doc_id % 5 < 4) and the full corpus — with per-round
-    color-histogram dot products."""
-    def fam(tag, where):
-        head = f"""
-m{tag} AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term){where}
-), e{tag} AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m{tag} a JOIN m{tag} b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= {min_cooc}
-), bd{tag} AS MATERIALIZED (
-  SELECT a AS node, b AS nbr FROM e{tag} UNION ALL SELECT b, a FROM e{tag}
-), c{tag}0 AS MATERIALIZED (
-  SELECT node, 'd' || CAST(count(*) AS VARCHAR) AS c
-  FROM bd{tag} GROUP BY node)"""
-        steps = []
-        for i in range(1, n_rounds + 1):
-            p = f"c{tag}{i - 1}"
-            steps.append(f""",
-c{tag}{i} AS MATERIALIZED (
-  SELECT s.node,
-         substr(md5(s.c || '|' || array_to_string(
-             list(nc.c ORDER BY nc.c), ',')), 1, 8) AS c
-  FROM {p} s JOIN bd{tag} ON bd{tag}.node = s.node
-  JOIN {p} nc ON nc.node = bd{tag}.nbr
-  GROUP BY s.node, s.c
-)""")
-        hists = [f""",
-h{tag}{i} AS (SELECT c, CAST(count(*) AS BIGINT) AS n
-              FROM c{tag}{i} GROUP BY c)""" for i in range(n_rounds + 1)]
-        return head + "".join(steps) + "".join(hists)
-
-    rounds_sql = []
-    for i in range(n_rounds + 1):
-        rounds_sql.append(f"""
-SELECT {i} AS round,
-       (SELECT CAST(count(*) AS BIGINT) FROM hb{i}) AS n_colors_base,
-       (SELECT CAST(count(*) AS BIGINT) FROM hf{i}) AS n_colors_full,
-       CAST(coalesce(count(*), 0) AS BIGINT) AS n_shared,
-       CAST(coalesce(sum(b.n * f.n), 0) AS BIGINT) AS kernel
-FROM hb{i} b JOIN hf{i} f ON f.c = b.c""")
-    return ("WITH " + fam("b", " AND d.doc_id % 5 < 4")[1:]
-            + "," + fam("f", "")[1:]
-            + " ".join([""]) + (" UNION ALL ".join(rounds_sql)))
-
-
-@register("kg_wl_kernel_snapshots", _wl_kernel_sql())
-def kg_wl_kernel_snapshots(spark, sf_dir):
-    """Weisfeiler-Lehman SUBTREE KERNEL between two KG snapshots — the
-    base partition's graph (doc_id % 5 < 4, the kg_incremental_edges
-    split) vs the full corpus graph: both run the identical md5
-    recoloring recurrence as kg_wl_refinement_docs, and each round
-    contributes the dot product of the color histograms (Shervashidze
-    et al., JMLR 2011) — the structural-similarity number a KG
-    maintenance pass watches to see HOW MUCH a delta reshaped the graph
-    (counts churn in k-hop neighborhood structure, not just edges).
-    Colors are comparable across snapshots because both hash identical
-    degree-seeded strings. Plan: 2×(k rounds of edges ⋈ colors),
-    per-round histogram joins — each round one node-keyed shuffle per
-    snapshot at any scale."""
-    def hists(docs):
-        m = (kg_docs.doc_mentions(spark, docs)
-             .select("doc_id", "term").distinct())
-        a = m.select("doc_id", F.col("term").alias("a"))
-        b = m.select("doc_id", F.col("term").alias("b"))
-        e = (a.join(b, "doc_id").filter(F.col("a") < F.col("b"))
-             .groupBy("a", "b").agg(F.count(F.lit(1)).alias("n"))
-             .filter(F.col("n") >= 2))
-        bd = (e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-              .unionAll(e.select(F.col("b"), F.col("a"))))
-        colors = (bd.groupBy("node")
-                  .agg(F.concat(F.lit("d"),
-                                F.count(F.lit(1)).cast("string"))
-                       .alias("c")))
-        out = [colors.groupBy("c").agg(F.count(F.lit(1)).cast("long")
-                                       .alias("n"))]
-        for _ in range(3):
-            nc = colors.select(F.col("node").alias("nbr"),
-                               F.col("c").alias("nbr_c"))
-            colors = (bd.join(colors, "node").join(nc, "nbr")
-                      .groupBy("node", "c")
-                      .agg(F.array_join(F.array_sort(
-                          F.collect_list("nbr_c")), ",").alias("ms"))
-                      .select("node", F.substring(F.md5(F.concat(
-                          F.col("c"), F.lit("|"), F.col("ms"))), 1, 8)
-                          .alias("c")))
-            out.append(colors.groupBy("c").agg(
-                F.count(F.lit(1)).cast("long").alias("n")))
-        return out
-
-    d = _t(spark, sf_dir, "documents")
-    hb = hists(d.filter(F.col("doc_id") % 5 < 4))
-    hf = hists(d)
-    rows = []
-    for i in range(4):
-        b_i = hb[i].select(F.col("c"), F.col("n").alias("nb"))
-        f_i = hf[i].select(F.col("c"), F.col("n").alias("nf"))
-        nb = b_i.agg(F.count(F.lit(1)).cast("long").alias("n_colors_base"))
-        nf = f_i.agg(F.count(F.lit(1)).cast("long").alias("n_colors_full"))
-        ker = (b_i.join(f_i, "c")
-               .agg(F.coalesce(F.count(F.lit(1)), F.lit(0)).cast("long")
-                    .alias("n_shared"),
-                    F.coalesce(F.sum(F.col("nb") * F.col("nf")), F.lit(0))
-                    .cast("long").alias("kernel")))
-        rows.append(nb.crossJoin(nf).crossJoin(ker).select(
-            F.lit(i).alias("round"), "n_colors_base", "n_colors_full",
-            "n_shared", "kernel"))
-    res = rows[0]
-    for r in rows[1:]:
-        res = res.unionAll(r)
-    return res
-
-
-_SNAP_DIFF_SQL = f"""
-WITH m AS (
-  SELECT DISTINCT d.doc_id, lex.term, d.doc_id % 5 < 4 AS in_base
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), base AS (
-  SELECT a.term AS term_a, b.term AS term_b,
-         CAST(count(*) AS BIGINT) AS common
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  WHERE a.in_base
-  GROUP BY 1, 2 HAVING count(*) >= 2
-), full_g AS (
-  SELECT a.term AS term_a, b.term AS term_b,
-         CAST(count(*) AS BIGINT) AS common
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY 1, 2 HAVING count(*) >= 2
-)
-SELECT coalesce(b.term_a, f.term_a) AS term_a,
-       coalesce(b.term_b, f.term_b) AS term_b,
-       CAST(coalesce(b.common, 0) AS BIGINT) AS common_base,
-       CAST(coalesce(f.common, 0) AS BIGINT) AS common_full,
-       CASE WHEN b.term_a IS NULL THEN 'added'
-            WHEN f.term_a IS NULL THEN 'dropped'
-            WHEN f.common = b.common THEN 'stable'
-            ELSE 'support_changed' END AS status,
-       CAST(coalesce(f.common, 0) - coalesce(b.common, 0) AS BIGINT)
-           AS delta_support
-FROM base b FULL OUTER JOIN full_g f
-  ON f.term_a = b.term_a AND f.term_b = b.term_b
-"""
-
-
-@register("kg_snapshot_diff", _SNAP_DIFF_SQL)
-def kg_snapshot_diff(spark, sf_dir):
-    """KG snapshot DIFF — the human-readable face of the IVM family
-    (kg_incremental_edges proves the merge; this reports what the delta
-    DID): full-outer edge comparison between the base partition's graph
-    and the full corpus graph, each edge labeled added / dropped /
-    stable / support_changed with its support delta. 'dropped' is
-    structurally possible here because the threshold is applied per
-    snapshot (an edge above threshold on 80% of docs can stay, gain, or
-    — with a different corpus — fall away); the delta column is what a
-    nightly KG build publishes as its change log. One full-outer
-    vocabulary-scale join over two grouped aggregates."""
-    d = _t(spark, sf_dir, "documents")
-
-    def edges(docs):
-        m = (kg_docs.doc_mentions(spark, docs)
-             .select("doc_id", "term").distinct())
-        a = m.select("doc_id", F.col("term").alias("term_a"))
-        b = m.select("doc_id", F.col("term").alias("term_b"))
-        return (a.join(b, "doc_id")
-                .filter(F.col("term_a") < F.col("term_b"))
-                .groupBy("term_a", "term_b")
-                .agg(F.count(F.lit(1)).cast("long").alias("common"))
-                .filter(F.col("common") >= 2))
-
-    b = edges(d.filter(F.col("doc_id") % 5 < 4)) \
-        .withColumnRenamed("common", "cb")
-    f = edges(d).withColumnRenamed("common", "cf")
-    j = b.join(f, ["term_a", "term_b"], "full_outer")
-    return j.select(
-        "term_a", "term_b",
-        F.coalesce("cb", F.lit(0)).cast("long").alias("common_base"),
-        F.coalesce("cf", F.lit(0)).cast("long").alias("common_full"),
-        F.when(F.col("cb").isNull(), "added")
-        .when(F.col("cf").isNull(), "dropped")
-        .when(F.col("cf") == F.col("cb"), "stable")
-        .otherwise("support_changed").alias("status"),
-        (F.coalesce("cf", F.lit(0)) - F.coalesce("cb", F.lit(0)))
-        .cast("long").alias("delta_support"))
-
-
-def _sgi_fixture_sql(n: int = 26, seed: int = 42) -> str:
-    """Oracle for the REAL SGI decode path: pixels are pure formulas of
-    (x, y, id); a bottom-up row flip miss, a planar/interleave mixup, a
-    wrong RLE count bit or a broken start/length table flips the hash
-    for the odd (RLE) ids."""
-    rows = []
-    for i in range(n):
-        w = 13 + (i * 5 + seed) % 12
-        h = 10 + (i * 7 + seed) % 9
-        rs = sum(((x // 5) * 11 + y * 3 + i) % 256
-                 for y in range(h) for x in range(w))
-        gs = sum(((x // 4) * 7 + y * 5 + i * 3) % 256
-                 for y in range(h) for x in range(w))
-        bs = sum(((x // 6) * 13 + y + i * 7) % 256
-                 for y in range(h) for x in range(w))
-        npx = w * h
-        rows.append(f"({i}, {w}, {h}, {rs / npx!r}, {gs / npx!r},"
-                    f" {bs / npx!r})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(r_mean AS DOUBLE) AS r_mean,"
-            f" CAST(g_mean AS DOUBLE) AS g_mean,"
-            f" CAST(b_mean AS DOUBLE) AS b_mean"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, r_mean, g_mean, b_mean)")
-
-
-@register("multimodal_sgi_features", _sgi_fixture_sql())
-def multimodal_sgi_features(spark, sf_dir):
-    """REAL SGI (.rgb) decode end to end (sources/multimodal.decode_sgi):
-    512-byte big-endian header, channel-PLANAR bottom-up rows (both
-    quirks the other codecs don't have), verbatim and per-row RLE with
-    offset/length tables (count-in-low-7-bits, high bit = literal copy,
-    zero terminator). Checked against the pure-Python channel-mean
-    re-derivation from the pixel formulas."""
-    from .sources.multimodal import (
-        extract_image_features_real,
-        synthetic_sgi_media,
-    )
-    out = extract_image_features_real(synthetic_sgi_media(spark, 26))
-    return out.select("media_id", "width", "height",
-                      "r_mean", "g_mean", "b_mean")
-
-
-_LZ76_SQL = """
-WITH RECURSIVE daily AS (
-  SELECT CAST(ts AS DATE) AS d, count(*) AS x FROM events GROUP BY 1
-), sym AS (
-  SELECT d, CASE WHEN x > lag(x) OVER (ORDER BY d) THEN '1' ELSE '0' END
-             AS b,
-         row_number() OVER (ORDER BY d) AS rn
-  FROM daily
-), s AS (
-  SELECT string_agg(b, '' ORDER BY d) AS str,
-         CAST(count(*) AS BIGINT) AS n
-  FROM sym WHERE rn > 1
-), parse AS (
-  SELECT 1 AS p, 0 AS c, str, n FROM s
-  UNION ALL
-  SELECT p + least(
-           list_max(list_filter(range(0, n - p + 2),
-             L -> L = 0 OR strpos(substr(str, 1,
-                                         CAST(greatest(p + L - 2, 0) AS INT)),
-                                  substr(str, CAST(p AS INT),
-                                         CAST(L AS INT))) > 0)) + 1,
-           n - p + 1) AS p,
-         c + 1, str, n
-  FROM parse WHERE p <= n
-)
-SELECT n AS n_symbols, CAST(max(c) AS BIGINT) AS lz76_c,
-       CAST(floor(CAST(max(c) AS DOUBLE) * ln(CAST(n AS DOUBLE))
-                  / (CAST(n AS DOUBLE) * ln(2.0)) * 1000000 + 0.5)
-            AS BIGINT) AS lz76_norm_e6
-FROM parse GROUP BY n
-"""
-
-
-@register("q_events_lz76_complexity", _LZ76_SQL)
-def q_events_lz76_complexity(spark, sf_dir):
-    """Lempel-Ziv (LZ76, exhaustive-history variant) complexity of the
-    daily up/down event-volume sequence — the model-free randomness
-    census next to q_events_runs_test and q_events_kendall_turning:
-    greedy parse where each phrase is the SHORTEST prefix-novel
-    substring (reproducibility from the extended prefix, overlap
-    allowed); c(s) counts phrases, normalized by n/log₂n. The parse is a
-    sequential recurrence, so the engine replays it in one
-    calendar-scale pandas group (the bounded-series discipline of the
-    Holt/Viterbi family) and the oracle steps it with a recursive CTE
-    whose per-step novel-extension search is a list_filter over prefix
-    strpos probes — identical greedy choices, identical phrase
-    boundaries."""
-    import pandas as pd
-
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).alias("x")))
-    w = Window.orderBy("d")
-    sym = (daily.select("d", F.when(F.col("x") > F.lag("x").over(w), "1")
-                        .otherwise("0").alias("b"),
-                        F.row_number().over(w).alias("rn"))
-           .filter(F.col("rn") > 1)
-           .select(F.lit(1).alias("g"), "d", "b"))
-
-    def parse(pdf: pd.DataFrame) -> pd.DataFrame:
-        import math
-        s = "".join(pdf.sort_values("d")["b"])
-        n = len(s)
-        p, c = 1, 0
-        while p <= n:
-            lmax = 0
-            for ll in range(1, n - p + 2):
-                if s[p - 1:p - 1 + ll] in s[:p + ll - 2]:
-                    lmax = ll
-                else:
-                    break
-            p += min(lmax + 1, n - p + 1)
-            c += 1
-        norm = int(math.floor(c * math.log(n) / (n * math.log(2.0))
-                              * 1_000_000 + 0.5))
-        return pd.DataFrame([(n, c, norm)],
-                            columns=["n_symbols", "lz76_c",
-                                     "lz76_norm_e6"])
-
-    return sym.groupBy("g").applyInPandas(
-        parse, schema="n_symbols long, lz76_c long, lz76_norm_e6 long"
-    ).select("n_symbols", "lz76_c", "lz76_norm_e6")
-
-
-_KALMAN_Q = 10.0
-_KALMAN_R = 400.0
-
-
-_KALMAN_SQL = f"""
-WITH RECURSIVE daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-), t AS (
-  SELECT d, x, row_number() OVER (ORDER BY d) AS rn FROM daily
-), kf AS (
-  SELECT rn, d, x, CAST(x AS DOUBLE) AS m, CAST({_KALMAN_R!r} AS DOUBLE) AS p,
-         CAST(1.0 AS DOUBLE) AS k
-  FROM t WHERE rn = 1
-  UNION ALL
-  SELECT t.rn, t.d, t.x,
-         kf.m + ((kf.p + {_KALMAN_Q!r}) / ((kf.p + {_KALMAN_Q!r}) + {_KALMAN_R!r}))
-                * (CAST(t.x AS DOUBLE) - kf.m),
-         (1.0 - ((kf.p + {_KALMAN_Q!r}) / ((kf.p + {_KALMAN_Q!r}) + {_KALMAN_R!r})))
-             * (kf.p + {_KALMAN_Q!r}),
-         ((kf.p + {_KALMAN_Q!r}) / ((kf.p + {_KALMAN_Q!r}) + {_KALMAN_R!r}))
-  FROM kf JOIN t ON t.rn = kf.rn + 1
-)
-SELECT d, x, CAST(floor(m * 1000000 + 0.5) AS BIGINT) AS kalman_e6,
-       CAST(floor(k * 1000000 + 0.5) AS BIGINT) AS gain_e6
-FROM kf
-"""
-
-
-@register("q_events_kalman_1d", _KALMAN_SQL)
-def q_events_kalman_1d(spark, sf_dir):
-    """1-D Kalman filter (local-level model, Q=10, R=400) over the daily
-    event volumes — the optimal-gain counterpart of the fixed-α EWMA
-    (q_events_ewma): per step K = (P+Q)/(P+Q+R), m += K(x−m),
-    P = (1−K)(P+Q), seeded at the first observation with P₀=R. The
-    recurrence is SEQUENTIAL FLOAT, kept bit-identical by evaluating the
-    exact same IEEE-754 expression tree in both engines (the Goertzel
-    discipline): the engine replays it in one calendar-scale pandas
-    group, the oracle steps a recursive CTE with DOUBLE state; outputs
-    are e6-rounded once per day. Gain converges to the steady state in
-    a few steps — visible in gain_e6."""
-    import pandas as pd
-
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast("long").alias("x"))
-             .select(F.lit(1).alias("g"), "d", "x"))
-
-    def kf(pdf: pd.DataFrame) -> pd.DataFrame:
-        import math
-        pdf = pdf.sort_values("d", ignore_index=True)
-        out = []
-        m = p = k = 0.0
-        for i, (d, x) in enumerate(zip(pdf["d"], pdf["x"])):
-            xi = float(x)
-            if i == 0:
-                m, p, k = xi, _KALMAN_R, 1.0
-            else:
-                pq = p + _KALMAN_Q
-                k = pq / (pq + _KALMAN_R)
-                m = m + k * (xi - m)
-                p = (1.0 - k) * pq
-            out.append((d, int(x), int(math.floor(m * 1000000 + 0.5)),
-                        int(math.floor(k * 1000000 + 0.5))))
-        return pd.DataFrame(out, columns=["d", "x", "kalman_e6",
-                                          "gain_e6"])
-
-    return daily.groupBy("g").applyInPandas(
-        kf, schema="d date, x long, kalman_e6 long, gain_e6 long"
-    ).select("d", "x", "kalman_e6", "gain_e6")
-
-
-# hour-angle cos/sin, e9-rounded ONCE here and INJECTED into both engines
-# (JVM Math vs system libm may differ in the last ulp — injected constants
-# remove the trig surface entirely, the SPRT/NDCG discipline)
-import math as _math  # noqa: E402
-
-_HOUR_COS_E9 = {h: round(_math.cos(2 * _math.pi * h / 24) * 1e9)
-                for h in range(24)}
-_HOUR_SIN_E9 = {h: round(_math.sin(2 * _math.pi * h / 24) * 1e9)
-                for h in range(24)}
-
-
-def _hour_case(table: dict[int, int], col: str) -> str:
-    branches = " ".join(f"WHEN {h} THEN CAST({v} AS HUGEINT)"
-                        for h, v in table.items())
-    return f"(CASE {col} {branches} END)"
-
-
-_CIRCADIAN_SQL = f"""
-WITH h AS (
-  SELECT event_type, hour(CAST(ts AS TIMESTAMP)) AS hr FROM events
-), s AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         sum({_hour_case(_HOUR_COS_E9, 'hr')}) AS sc,
-         sum({_hour_case(_HOUR_SIN_E9, 'hr')}) AS ss
-  FROM h GROUP BY event_type
-)
-SELECT event_type, n,
-       CAST(sc AS BIGINT) AS sum_cos_e9, CAST(ss AS BIGINT) AS sum_sin_e9,
-       CAST(floor(sqrt(CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE)
-                       + CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE))
-                  / (CAST(n AS DOUBLE) * 1000.0) + 0.5) AS BIGINT)
-           AS resultant_e6
-FROM s
-"""
-
-
-@register("q_events_circadian_concentration", _CIRCADIAN_SQL)
-def q_events_circadian_concentration(spark, sf_dir):
-    """Circular (directional) statistics of the hour-of-day distribution
-    per event type: mean resultant length R̄ = |Σe^{{iθ}}|/n over hour
-    angles θ = 2πh/24 — R̄→1 means the type fires at one time of day,
-    R̄→0 means it is circadian-uniform (the von Mises concentration
-    proxy). The 24 cos/sin values are e9-rounded ONCE in Python and
-    INJECTED into both engines as CASE tables, so no trig runs in either
-    engine; sums are exact integers and the only float is one sqrt of an
-    exact value. Plan: one scan, one grouped sum — the injected-constant
-    discipline of q_events_sprt/ndcg."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    cos_map = F.create_map(*[F.lit(x) for h in range(24)
-                             for x in (h, _HOUR_COS_E9[h])])
-    sin_map = F.create_map(*[F.lit(x) for h in range(24)
-                             for x in (h, _HOUR_SIN_E9[h])])
-    h = e.select("event_type", F.hour("ts").alias("hr"))
-    s = h.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum(cos_map[F.col("hr")].cast(dec)).alias("sc"),
-        F.sum(sin_map[F.col("hr")].cast(dec)).alias("ss"))
-    return s.select(
-        "event_type", "n",
-        F.col("sc").cast("long").alias("sum_cos_e9"),
-        F.col("ss").cast("long").alias("sum_sin_e9"),
-        F.expr("CAST(floor(sqrt(CAST(sc AS DOUBLE) * CAST(sc AS DOUBLE)"
-               " + CAST(ss AS DOUBLE) * CAST(ss AS DOUBLE))"
-               " / (CAST(n AS DOUBLE) * 1000.0) + 0.5) AS BIGINT)")
-        .alias("resultant_e6"))
-
-
-_ROP_SQL = """
-WITH d AS (
-  SELECT p.p_type, CAST(o.o_orderdate AS DATE) AS day,
-         CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS q
-  FROM lineitem l
-  JOIN orders o ON o.o_orderkey = l.l_orderkey
-  JOIN part p ON p.p_partkey = l.l_partkey
-  GROUP BY 1, 2
-), span AS (
-  SELECT CAST(date_diff('day', min(day), max(day)) + 1 AS BIGINT) AS days
-  FROM d
-), s AS (
-  SELECT p_type, CAST(count(*) AS BIGINT) AS n_days,
-         CAST(sum(q) AS HUGEINT) AS sq,
-         CAST(sum(q * q) AS HUGEINT) AS sqq
-  FROM d GROUP BY 1
-)
-SELECT s.p_type, s.n_days,
-       CAST(sq * 1000000 // span.days AS BIGINT) AS mean_daily_e6,
-       CAST(span.days * sqq - sq * sq AS BIGINT) AS var_num,
-       CAST(sq * 1000000 * 7 // span.days
-            + floor(1.645 * sqrt(CAST(span.days * sqq - sq * sq AS DOUBLE)
-                                 * 7.0) * 1000000.0
-                    / CAST(span.days AS DOUBLE) + 0.5) AS BIGINT)
-           AS reorder_point_e6
-FROM s CROSS JOIN span
-"""
-
-
-@register("q_orders_reorder_point", _ROP_SQL)
-def q_orders_reorder_point(spark, sf_dir):
-    """Inventory reorder point per part type at a 7-day lead time:
-    ROP = μ_d·L + z·σ_d·√L with z = 1.645 (95% service level), daily
-    demand statistics over the FULL calendar span (zero-demand days
-    count via the span denominator, so μ and σ are population moments of
-    the true daily series without materializing empty days):
-    σ_d√L·z folds into ONE sqrt of the exact integer variance numerator
-    times L, divided once by the span — the single-float discipline.
-    The ops-research sibling of q_parts_abc_classification and
-    q_orders_bullwhip."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    p = _t(spark, sf_dir, "part")
-    dec = "decimal(38,0)"
-    d = (li.join(o.select(F.col("o_orderkey").alias("l_orderkey"),
-                          "o_orderdate"), "l_orderkey")
-         .join(F.broadcast(p.select(F.col("p_partkey").alias("l_partkey"),
-                                    "p_type")), "l_partkey")
-         .groupBy("p_type", F.col("o_orderdate").cast("date").alias("day"))
-         .agg(F.sum(F.col("l_quantity").cast("long")).alias("q")))
-    span = d.agg((F.datediff(F.max("day"), F.min("day")) + 1).cast("long")
-                 .alias("days"))
-    s = d.groupBy("p_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.sum(F.col("q").cast(dec)).alias("sq"),
-        F.sum((F.col("q") * F.col("q")).cast(dec)).alias("sqq"))
-    return (s.crossJoin(F.broadcast(span))
-            .select("p_type", "n_days",
-                    F.expr("CAST(sq * 1000000 div days AS BIGINT)")
-                    .alias("mean_daily_e6"),
-                    F.expr("CAST(days * sqq - sq * sq AS BIGINT)")
-                    .alias("var_num"),
-                    F.expr("CAST(sq * 1000000 * 7 div days"
-                           " + floor(1.645 * sqrt(CAST(days * sqq - sq * sq"
-                           " AS DOUBLE) * 7.0) * 1000000.0"
-                           " / CAST(days AS DOUBLE) + 0.5) AS BIGINT)")
-                    .alias("reorder_point_e6")))
-
-
-_CORE_PERIPHERY_SQL = f"""
-WITH m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), deg AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS degree FROM (
-    SELECT a AS term FROM e UNION ALL SELECT b FROM e
-  ) GROUP BY term
-), rk AS (
-  SELECT term, degree,
-         CAST(row_number() OVER (ORDER BY degree DESC, term) AS BIGINT)
-             AS rank
-  FROM deg
-), n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM rk),
-er AS (
-  SELECT ra.rank AS ra, rb.rank AS rb
-  FROM e JOIN rk ra ON ra.term = e.a JOIN rk rb ON rb.term = e.b
-), ks AS (
-  SELECT rank AS k FROM rk WHERE rank < (SELECT n FROM n)
-), sc AS (
-  SELECT ks.k,
-         CAST(count(*) FILTER (WHERE greatest(er.ra, er.rb) <= ks.k)
-              AS BIGINT) AS cc,
-         CAST(count(*) FILTER (WHERE least(er.ra, er.rb) > ks.k)
-              AS BIGINT) AS pp
-  FROM ks CROSS JOIN er GROUP BY ks.k
-), best AS (
-  SELECT k, cc + ((SELECT n FROM n) - k) * ((SELECT n FROM n) - k - 1) // 2
-             - pp AS score
-  FROM sc
-  ORDER BY score DESC, k ASC LIMIT 1
-)
-SELECT rk.term, rk.degree, rk.rank,
-       CASE WHEN rk.rank <= best.k THEN 'core' ELSE 'periphery' END AS role,
-       best.k AS best_k, CAST(best.score AS BIGINT) AS fit_score
-FROM rk CROSS JOIN best
-"""
-
-
-@register("kg_core_periphery", _CORE_PERIPHERY_SQL)
-def kg_core_periphery(spark, sf_dir):
-    """Discrete core-periphery decomposition (Borgatti & Everett 1999,
-    degree-ordered sweep): nodes ranked by degree, every split point k
-    scored by agreement with the ideal pattern — present core-core edges
-    PLUS absent periphery-periphery edges — and the argmax split labels
-    each node core/periphery. The mesoscale structure lens next to
-    kg_kcore_docs (k-core is a local threshold; this is a global
-    two-block fit) and kg_rich_club_docs. Exact integer scoring,
-    deterministic tie-break toward the smaller core. Plan: one degree
-    rank, a |k|×|edges| conditional-count grid (both vocabulary-scale);
-    at web scale the sweep runs on the degree-ranked edge list as k
-    cumulative counts — two sorted prefix sums, no grid."""
-    e = _cooc_edges(spark, sf_dir, 2).select(
-        F.col("term_a").alias("a"), F.col("term_b").alias("b"))
-    deg = (e.select(F.col("a").alias("term"))
-           .unionAll(e.select("b"))
-           .groupBy("term").agg(F.count(F.lit(1)).cast("long")
-                                .alias("degree")))
-    wrk = Window.orderBy(F.desc("degree"), F.asc("term"))
-    rk = deg.withColumn("rank", F.row_number().over(wrk).cast("long"))
-    n_nodes = rk.count()  # vocabulary-sized constant
-    er = (e.join(rk.select(F.col("term").alias("a"),
-                           F.col("rank").alias("ra")), "a")
-          .join(rk.select(F.col("term").alias("b"),
-                          F.col("rank").alias("rb")), "b")
-          .select("ra", "rb"))
-    ks = spark.range(1, n_nodes).select(F.col("id").alias("k"))
-    sc = (ks.crossJoin(er)
-          .groupBy("k")
-          .agg(F.sum(F.when(F.greatest("ra", "rb") <= F.col("k"), 1)
-                     .otherwise(0)).cast("long").alias("cc"),
-               F.sum(F.when(F.least("ra", "rb") > F.col("k"), 1)
-                     .otherwise(0)).cast("long").alias("pp")))
-    score = (F.col("cc")
-             + (F.lit(n_nodes) - F.col("k"))
-             * (F.lit(n_nodes) - F.col("k") - 1) / 2
-             - F.col("pp")).cast("long")
-    wbest = Window.orderBy(F.desc("score"), F.asc("k"))
-    best = (sc.select("k", score.alias("score"))
-            .withColumn("rn", F.row_number().over(wbest))
-            .filter(F.col("rn") == 1).select("k", "score"))
-    return (rk.crossJoin(F.broadcast(best))
-            .select("term", "degree", "rank",
-                    F.when(F.col("rank") <= F.col("k"), "core")
-                    .otherwise("periphery").alias("role"),
-                    F.col("k").alias("best_k"),
-                    F.col("score").cast("long").alias("fit_score")))
-
-
-_KN_SQL = """
-WITH w AS (
-  SELECT string_split(text, ' ') AS ws FROM documents
-), bg AS (
-  SELECT unnest(list_transform(range(1, len(ws)),
-                i -> {'w1': ws[i], 'w2': ws[i + 1]})) AS p
-  FROM w WHERE len(ws) >= 2
-), c AS (
-  SELECT p.w1 AS w1, p.w2 AS w2, CAST(count(*) AS BIGINT) AS c
-  FROM bg GROUP BY 1, 2
-), c1 AS (
-  SELECT w1, CAST(sum(c) AS BIGINT) AS c1,
-         CAST(count(*) AS BIGINT) AS n1f
-  FROM c GROUP BY w1
-), rev AS (
-  SELECT w2, CAST(count(*) AS BIGINT) AS n1r FROM c GROUP BY w2
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n1all FROM c
-)
-SELECT c.w1, c.w2, c.c,
-       CAST((greatest(4 * c.c - 3, 0) * tot.n1all + 3 * c1.n1f * rev.n1r)
-            * 1000000000
-            // (4 * c1.c1 * tot.n1all) AS BIGINT) AS pkn_e9
-FROM c JOIN c1 ON c1.w1 = c.w1 JOIN rev ON rev.w2 = c.w2 CROSS JOIN tot
-"""
-
-
-@register("text_kneser_ney_bigram", _KN_SQL)
-def text_kneser_ney_bigram(spark, sf_dir):
-    """Interpolated Kneser-Ney bigram probabilities (D = 0.75) — the
-    canonical LM smoothing next to text_good_turing and text_bigram_lm's
-    MLE: P(w₂|w₁) = max(c−D,0)/c(w₁) + D·N₁₊(w₁·)/c(w₁) · P_cont(w₂)
-    with the CONTINUATION unigram P_cont = N₁₊(·w₂)/N₁₊(··); with
-    D = 3/4 the whole expression clears to one exact integer quotient
-    (max(4c−3,0)·N + 3·N₁₊(w₁·)·N₁₊(·w₂)) / (4·c(w₁)·N), e9-floored
-    once per observed bigram. Plan: one exploded bigram aggregate, two
-    marginal rollups, a broadcast scalar — the smoothing table is
-    vocabulary²-bounded at any corpus size."""
-    d = _t(spark, sf_dir, "documents")
-    bg = (d.select(F.split("text", " ").alias("ws"))
-          .filter(F.size("ws") >= 2)
-          .select(F.explode(F.expr(
-              "transform(sequence(1, size(ws) - 1),"
-              " i -> struct(element_at(ws, i) AS w1,"
-              " element_at(ws, i + 1) AS w2))")).alias("p"))
-          .select("p.w1", "p.w2"))
-    c = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).cast("long")
-                                   .alias("c"))
-    c1 = c.groupBy("w1").agg(F.sum("c").cast("long").alias("c1"),
-                             F.count(F.lit(1)).cast("long").alias("n1f"))
-    rev = c.groupBy("w2").agg(F.count(F.lit(1)).cast("long").alias("n1r"))
-    tot = c.agg(F.count(F.lit(1)).cast("long").alias("n1all"))
-    return (c.join(c1, "w1").join(rev, "w2")
-            .crossJoin(F.broadcast(tot))
-            .select("w1", "w2", "c", F.expr(
-                "CAST((greatest(4 * c - 3, 0) * n1all + 3 * n1f * n1r)"
-                " * 1000000000 div (4 * c1 * n1all) AS BIGINT)")
-                .alias("pkn_e9")))
-
-
-_HURST_SIZES = (5, 10, 15)
-_HURST_LNM_E6 = {m: round(_math.log(m) * 1e6) for m in _HURST_SIZES}
-
-
-def _hurst_sql() -> str:
-    per_size = []
-    for m in _HURST_SIZES:
-        per_size.append(f"""
-SELECT {m} AS m, blk,
-       CAST(max(dk) - min(dk) AS HUGEINT) AS dd,
-       CAST({m} * sum(x * x) - sum(x) * sum(x) AS HUGEINT) AS v
-FROM (
-  SELECT blk, x,
-         {m} * sum(x) OVER (PARTITION BY blk ORDER BY rn) - k * s AS dk
-  FROM (
-    SELECT (rn - 1) // {m} AS blk, x, rn,
-           row_number() OVER (PARTITION BY (rn - 1) // {m}
-                              ORDER BY rn) AS k,
-           sum(x) OVER (PARTITION BY (rn - 1) // {m}) AS s,
-           count(*) OVER (PARTITION BY (rn - 1) // {m}) AS cnt
-    FROM t
-  ) WHERE cnt = {m}
-) GROUP BY blk""")
-    blocks = " UNION ALL ".join(per_size)
-    lnm = " ".join(f"WHEN {m} THEN {v}"
-                   for m, v in _HURST_LNM_E6.items())
-    return f"""
-WITH t AS (
-  SELECT CAST(count(*) AS BIGINT) AS x,
-         row_number() OVER (ORDER BY CAST(ts AS DATE)) AS rn
-  FROM events GROUP BY CAST(ts AS DATE)
-), rsb AS ({blocks}),
-rs AS (
-  SELECT m,
-         CAST(sum(CAST(floor(CAST(dd AS DOUBLE) / sqrt(CAST(v AS DOUBLE))
-                             * 1000000 + 0.5) AS BIGINT))
-              // count(*) AS BIGINT) AS rs_e6,
-         CAST(count(*) AS BIGINT) AS n_blocks
-  FROM rsb WHERE v > 0 GROUP BY m
-), pts AS (
-  SELECT CAST(CASE m {lnm} END AS BIGINT) AS lx,
-         CAST(floor(ln(CAST(rs_e6 AS DOUBLE) / 1000000.0) * 1000000 + 0.5)
-              AS BIGINT) AS ly,
-         m, rs_e6, n_blocks
-  FROM rs
-), ols AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n,
-         CAST(sum(lx) AS HUGEINT) AS sx, CAST(sum(ly) AS HUGEINT) AS sy,
-         CAST(sum(lx * ly) AS HUGEINT) AS sxy,
-         CAST(sum(lx * lx) AS HUGEINT) AS sxx
-  FROM pts
-)
-SELECT pts.m, pts.n_blocks, pts.rs_e6,
-       CAST((ols.n * ols.sxy - ols.sx * ols.sy) * 1000000
-            // (ols.n * ols.sxx - ols.sx * ols.sx) AS BIGINT) AS hurst_e6
-FROM pts CROSS JOIN ols
-"""
-
-
-@register("q_events_hurst_rs", _hurst_sql())
-def q_events_hurst_rs(spark, sf_dir):
-    """Hurst exponent via rescaled-range (R/S) analysis of the daily
-    event series — the long-memory diagnostic next to q_events_autocorr
-    and the Mann-Kendall trend test (H≈0.5 random walk, H>0.5
-    persistent): per non-overlapping block of size m ∈ {5,10,15}, the
-    cumulative-deviation range clears its mean via Dₖ = m·prefixₖ − k·S
-    (exact integers) and R/S = ΔD/√(m·Σx²−S²) takes ONE float
-    sqrt+division, e6-floored per block, then an exact integer mean per
-    size; H is the exact-integer OLS slope of ln(R/S) on ln(m) with the
-    three ln(m) constants INJECTED e6 (no cross-engine log drift on the
-    x side, one guarded ln on the y side). Plan: one daily aggregate,
-    three block-window passes, a 3-point regression."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast("long").alias("x")))
-    t = daily.select("x", F.row_number().over(Window.orderBy("d"))
-                     .alias("rn"))
-    parts = []
-    for m in _HURST_SIZES:
-        blk = ((F.col("rn") - 1) / m).cast("long")
-        wb = Window.partitionBy("blk")
-        wo = Window.partitionBy("blk").orderBy("rn")
-        g = (t.select("x", "rn", blk.alias("blk"))
-             .select("blk", "x", "rn",
-                     F.row_number().over(wo).alias("k"),
-                     F.sum("x").over(wb).alias("s"),
-                     F.count(F.lit(1)).over(wb).alias("cnt"))
-             .filter(F.col("cnt") == m)
-             .select("blk", "x",
-                     (F.lit(m) * F.sum("x").over(wo)
-                      - F.col("k") * F.col("s")).alias("dk")))
-        parts.append(
-            g.groupBy("blk")
-            .agg((F.max("dk") - F.min("dk")).cast("decimal(38,0)")
-                 .alias("dd"),
-                 (F.lit(m) * F.sum(F.col("x") * F.col("x"))
-                  - F.sum("x") * F.sum("x")).cast("decimal(38,0)")
-                 .alias("v"))
-            .select(F.lit(m).alias("m"), "dd", "v"))
-    rsb = parts[0]
-    for p in parts[1:]:
-        rsb = rsb.unionAll(p)
-    rs = (rsb.filter(F.col("v") > 0)
-          .groupBy("m")
-          .agg(F.expr(
-              "CAST(sum(CAST(floor(CAST(dd AS DOUBLE)"
-              " / sqrt(CAST(v AS DOUBLE)) * 1000000 + 0.5) AS BIGINT))"
-              " div count(*) AS BIGINT)").alias("rs_e6"),
-              F.count(F.lit(1)).cast("long").alias("n_blocks")))
-    lnm_map = F.create_map(*[F.lit(x) for m in _HURST_SIZES
-                             for x in (m, _HURST_LNM_E6[m])])
-    pts = rs.select(
-        "m", "rs_e6", "n_blocks",
-        lnm_map[F.col("m")].cast("long").alias("lx"),
-        F.expr("CAST(floor(ln(CAST(rs_e6 AS DOUBLE) / 1000000.0)"
-               " * 1000000 + 0.5) AS BIGINT)").alias("ly"))
-    dec = "decimal(38,0)"
-    ols = pts.agg(F.count(F.lit(1)).cast(dec).alias("n"),
-                  F.sum("lx").cast(dec).alias("sx"),
-                  F.sum("ly").cast(dec).alias("sy"),
-                  F.sum(F.col("lx") * F.col("ly")).cast(dec).alias("sxy"),
-                  F.sum(F.col("lx") * F.col("lx")).cast(dec).alias("sxx"))
-    return (pts.crossJoin(F.broadcast(ols))
-            .select("m", "n_blocks", "rs_e6",
-                    F.expr("CAST((n * sxy - sx * sy) * 1000000"
-                           " div (n * sxx - sx * sx) AS BIGINT)")
-                    .alias("hurst_e6")))
-
-
-def _ilbm_fixture_sql(n: int = 24, seed: int = 42) -> str:
-    """Oracle for the ILBM decode path: index patterns and the 16-color
-    palette are pure formulas, so channel means are re-derived in plain
-    Python — a planar/chunky bit slip, an odd-chunk pad miss or a
-    ByteRun1 count error (the -128 no-op, the 257-n replicate) flips the
-    hash for the odd (compressed) ids."""
-    pal = [((i * 37) % 256, (i * 81) % 256, (i * 151) % 256)
-           for i in range(16)]
-    rows = []
-    for i in range(n):
-        w = 17 + (i * 5 + seed) % 14
-        h = 9 + (i * 7 + seed) % 8
-        rs = gs = bs = 0
-        for y in range(h):
-            for x in range(w):
-                r, g, b = pal[((x // 4) * 3 + y * 5 + i) % 16]
-                rs += r
-                gs += g
-                bs += b
-        npx = w * h
-        rows.append(f"({i}, {w}, {h}, {rs / npx!r}, {gs / npx!r},"
-                    f" {bs / npx!r})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(r_mean AS DOUBLE) AS r_mean,"
-            f" CAST(g_mean AS DOUBLE) AS g_mean,"
-            f" CAST(b_mean AS DOUBLE) AS b_mean"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, r_mean, g_mean, b_mean)")
-
-
-@register("multimodal_ilbm_features", _ilbm_fixture_sql())
-def multimodal_ilbm_features(spark, sf_dir):
-    """REAL Amiga IFF ILBM decode end to end
-    (sources/multimodal.decode_ilbm): FORM container walk with
-    even-padded chunks, BMHD/CMAP/BODY, per-scanline ByteRun1 (PackBits)
-    expansion, INTERLEAVED-BITPLANE planar→chunky gather (MSB-first, the
-    one bit layout no other codec here exercises), palette lookup —
-    checked against the pure-Python channel-mean re-derivation from the
-    index and palette formulas."""
-    from .sources.multimodal import (
-        extract_image_features_real,
-        synthetic_ilbm_media,
-    )
-    out = extract_image_features_real(synthetic_ilbm_media(spark, 24))
-    return out.select("media_id", "width", "height",
-                      "r_mean", "g_mean", "b_mean")
-
-
-_BARTLETT_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS HUGEINT) AS x
-  FROM events GROUP BY 1
-), t AS (
-  SELECT x, row_number() OVER (ORDER BY d) AS rn FROM daily
-), agg AS (
-  SELECT CAST(count(*) AS HUGEINT) AS nn, sum(x) AS s FROM t
-), lags AS (
-  SELECT k.k,
-         sum((agg.nn * a.x - agg.s) * (agg.nn * b.x - agg.s)) AS ck
-  FROM (SELECT unnest([1, 2, 3, 4, 5, 6, 7]) AS k) k
-  CROSS JOIN agg
-  JOIN t a ON TRUE
-  JOIN t b ON b.rn = a.rn + k.k
-  GROUP BY k.k
-), c0 AS (
-  SELECT sum((agg.nn * x - agg.s) * (agg.nn * x - agg.s)) AS c0
-  FROM t CROSS JOIN agg
-), r AS (
-  SELECT k, CAST(CASE WHEN ck >= 0 THEN ck * 1000000 // c0.c0
-                      ELSE -((-ck) * 1000000 // c0.c0) END AS BIGINT)
-             AS r_e6
-  FROM lags CROSS JOIN c0
-), cum AS (
-  SELECT k, r_e6,
-         coalesce(sum(r_e6 * r_e6)
-                  OVER (ORDER BY k ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND 1 PRECEDING), 0) AS srr
-  FROM r
-)
-SELECT cum.k, cum.r_e6,
-       CAST(floor(sqrt((1000000000000.0 + 2.0 * CAST(cum.srr AS DOUBLE))
-                       / CAST(agg.nn AS DOUBLE)) + 0.5) AS BIGINT)
-           AS bartlett_se_e6,
-       CAST(CASE WHEN abs(cum.r_e6) * 1000 >
-                 1960 * floor(sqrt((1000000000000.0
-                                    + 2.0 * CAST(cum.srr AS DOUBLE))
-                                   / CAST(agg.nn AS DOUBLE)) + 0.5)
-                 THEN 1 ELSE 0 END AS INTEGER) AS significant
-FROM cum CROSS JOIN (SELECT nn FROM agg) agg
-"""
-
-
-@register("q_events_acf_bartlett", _BARTLETT_SQL)
-def q_events_acf_bartlett(spark, sf_dir):
-    """Correlogram with Bartlett significance bands — the inference
-    layer q_events_autocorr lacks: mean-cleared integer autocovariances
-    give exact e6 autocorrelations r_k (lags 1-7), Bartlett's large-lag
-    standard error se_k = √((1 + 2Σ_j<k r_j²)/N) takes ONE sqrt per
-    lag from exact e12 sums, and each lag is flagged significant at
-    |r_k| > 1.96·se_k via cross-multiplied integers (1960/1000 — no
-    float comparison). Plan: one daily aggregate, a 7-lag shifted
-    self-join over the calendar series, one ordered prefix window."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast(dec).alias("x")))
-    t = daily.select("x", F.row_number().over(Window.orderBy("d"))
-                     .alias("rn"))
-    agg = t.agg(F.count(F.lit(1)).cast(dec).alias("nn"),
-                F.sum("x").alias("s"))
-    ks = spark.range(1, 8).select(F.col("id").alias("k"))
-    a = t.select(F.col("x").alias("xa"), F.col("rn").alias("ra"))
-    b = t.select(F.col("x").alias("xb"), F.col("rn").alias("rb"))
-    lags = (ks.crossJoin(a).crossJoin(F.broadcast(agg))
-            .join(b, F.col("rb") == F.col("ra") + F.col("k"))
-            .groupBy("k")
-            .agg(F.sum((F.col("nn") * F.col("xa") - F.col("s"))
-                       * (F.col("nn") * F.col("xb") - F.col("s")))
-                 .alias("ck")))
-    c0 = (t.crossJoin(F.broadcast(agg))
-          .agg(F.sum((F.col("nn") * F.col("x") - F.col("s"))
-                     * (F.col("nn") * F.col("x") - F.col("s")))
-               .alias("c0")))
-    # sign-decomposed truncation: DuckDB's // FLOORS negatives while
-    # Spark's div truncates — route both through |ck| so they agree
-    r = (lags.crossJoin(F.broadcast(c0))
-         .select("k", F.expr(
-             "CAST(CASE WHEN ck >= 0 THEN ck * 1000000 div c0"
-             " ELSE -((-ck) * 1000000 div c0) END AS BIGINT)")
-             .alias("r_e6")))
-    w = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, -1)
-    cum = r.select("k", "r_e6",
-                   F.coalesce(F.sum(F.col("r_e6") * F.col("r_e6")).over(w),
-                              F.lit(0)).alias("srr"))
-    se = ("floor(sqrt((1000000000000.0 + 2.0 * CAST(srr AS DOUBLE))"
-          " / CAST(nn AS DOUBLE)) + 0.5)")
-    return (cum.crossJoin(F.broadcast(agg.select("nn")))
-            .select("k", "r_e6",
-                    F.expr(f"CAST({se} AS BIGINT)").alias("bartlett_se_e6"),
-                    F.expr(f"CAST(CASE WHEN abs(r_e6) * 1000 >"
-                           f" 1960 * {se} THEN 1 ELSE 0 END AS INTEGER)")
-                    .alias("significant")))
-
-
-_DRAWDOWN_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d,
-         CAST(sum(CAST(floor("value" * 100 + 0.5) AS BIGINT)) AS BIGINT)
-             AS v
-  FROM events GROUP BY 1
-), cum AS (
-  SELECT d, v, sum(v) OVER (ORDER BY d) AS c FROM daily
-), dd AS (
-  SELECT d, c, max(c) OVER (ORDER BY d) AS peak,
-         max(c) OVER (ORDER BY d) - c AS drawdown
-  FROM cum
-)
-SELECT d, CAST(c AS BIGINT) AS cum_e2, CAST(peak AS BIGINT) AS peak_e2,
-       CAST(drawdown AS BIGINT) AS drawdown_e2,
-       CAST(max(drawdown) OVER () AS BIGINT) AS max_drawdown_e2
-FROM dd
-"""
-
-
-@register("q_events_max_drawdown", _DRAWDOWN_SQL)
-def q_events_max_drawdown(spark, sf_dir):
-    """Maximum drawdown of the cumulative daily event value (cents-exact
-    integers): running peak minus running cumulative per day, plus the
-    global maximum — the risk-metric counterpart of q_events_cusum (the
-    same cum-minus-running-extreme identity, read as loss-from-peak
-    instead of drift). Two ordered windows over the calendar series."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.sum(F.floor(F.col("value") * 100 + F.lit(0.5))
-                        .cast("long")).alias("v")))
-    w = Window.orderBy("d")
-    wall = Window.rowsBetween(Window.unboundedPreceding,
-                              Window.unboundedFollowing)
-    cum = daily.select("d", F.sum("v").over(w).alias("c"))
-    dd = cum.select("d", "c", F.max("c").over(w).alias("peak"),
-                    (F.max("c").over(w) - F.col("c")).alias("drawdown"))
-    return dd.select(
-        "d", F.col("c").cast("long").alias("cum_e2"),
-        F.col("peak").cast("long").alias("peak_e2"),
-        F.col("drawdown").cast("long").alias("drawdown_e2"),
-        F.max("drawdown").over(wall).cast("long")
-        .alias("max_drawdown_e2"))
-
-
-_MM1_SQL = """
-WITH arr AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n_orders,
-         CAST(date_diff('day', min(CAST(o_orderdate AS DATE)),
-                        max(CAST(o_orderdate AS DATE))) + 1 AS HUGEINT)
-             AS a_days
-  FROM orders
-), svc AS (
-  SELECT CAST(count(DISTINCT l_orderkey) AS HUGEINT) AS n_served,
-         CAST(date_diff('day', min(CAST(l_shipdate AS DATE)),
-                        max(CAST(l_shipdate AS DATE))) + 1 AS HUGEINT)
-             AS s_days
-  FROM lineitem
-)
-SELECT CAST(n_orders AS BIGINT) AS n_orders,
-       CAST(n_served AS BIGINT) AS n_served,
-       CAST(n_orders * 1000000 // a_days AS BIGINT) AS lambda_e6,
-       CAST(n_served * 1000000 // s_days AS BIGINT) AS mu_e6,
-       CAST(n_orders * s_days * 1000000 // (n_served * a_days) AS BIGINT)
-           AS rho_e6,
-       CAST(CASE WHEN n_served * a_days > n_orders * s_days THEN 1 ELSE 0
-            END AS INTEGER) AS stable,
-       CAST(CASE WHEN n_served * a_days > n_orders * s_days
-                 THEN n_orders * n_orders * s_days * s_days * 1000000
-                      // (n_served * s_days
-                          * (n_served * a_days - n_orders * s_days))
-            END AS BIGINT) AS lq_e6,
-       CAST(CASE WHEN n_served * a_days > n_orders * s_days
-                 THEN n_orders * s_days * s_days * 1000000
-                      // (n_served * (n_served * a_days - n_orders * s_days))
-            END AS BIGINT) AS wq_days_e6
-FROM arr CROSS JOIN svc
-"""
-
-
-@register("q_orders_mm1_queue", _MM1_SQL)
-def q_orders_mm1_queue(spark, sf_dir):
-    """M/M/1 queueing estimates for the order-fulfilment system: arrival
-    rate λ from orders/day, service rate μ from distinct orders
-    shipped/day (each over its own calendar span), then the textbook
-    stationary quantities ρ = λ/μ, Lq = ρ²/(1−ρ) = λ²/(μ(μ−λ)) and
-    Wq = λ/(μ(μ−λ)) — every one an EXACT integer quotient after
-    clearing the day-span denominators (λ = n_o/a, μ = n_s/s ⟹
-    Lq = n_o²s²/(n_s·s·(n_s·a − n_o·s))). On THIS corpus the ship span
-    outruns the order span so ρ > 1: the queue is transient, the
-    stationary quantities are undefined, and the query says so honestly
-    — stable=0 with NULL Lq/Wq (the guard also keeps every division
-    positive, sidestepping the floor-vs-truncate divergence on negative
-    integer division). The steady-state companion of
-    q_orders_little_law (which measures; this models). Two scans, two
-    3-cell reductions."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem")
-    dec = "decimal(38,0)"
-    arr = o.agg(
-        F.count(F.lit(1)).cast(dec).alias("n_orders"),
-        (F.datediff(F.max(F.col("o_orderdate").cast("date")),
-                    F.min(F.col("o_orderdate").cast("date"))) + 1)
-        .cast(dec).alias("a_days"))
-    svc = li.agg(
-        F.countDistinct("l_orderkey").cast(dec).alias("n_served"),
-        (F.datediff(F.max(F.col("l_shipdate").cast("date")),
-                    F.min(F.col("l_shipdate").cast("date"))) + 1)
-        .cast(dec).alias("s_days"))
-    stable = "n_served * a_days > n_orders * s_days"
-    return (arr.crossJoin(svc)
-            .select(
-                F.col("n_orders").cast("long").alias("n_orders"),
-                F.col("n_served").cast("long").alias("n_served"),
-                F.expr("CAST(n_orders * 1000000 div a_days AS BIGINT)")
-                .alias("lambda_e6"),
-                F.expr("CAST(n_served * 1000000 div s_days AS BIGINT)")
-                .alias("mu_e6"),
-                F.expr("CAST(n_orders * s_days * 1000000"
-                       " div (n_served * a_days) AS BIGINT)")
-                .alias("rho_e6"),
-                F.expr(f"CAST(CASE WHEN {stable} THEN 1 ELSE 0 END"
-                       " AS INTEGER)").alias("stable"),
-                F.expr(f"CAST(CASE WHEN {stable}"
-                       " THEN n_orders * n_orders * s_days * s_days"
-                       " * 1000000 div (n_served * s_days"
-                       " * (n_served * a_days - n_orders * s_days))"
-                       " END AS BIGINT)").alias("lq_e6"),
-                F.expr(f"CAST(CASE WHEN {stable}"
-                       " THEN n_orders * s_days * s_days * 1000000"
-                       " div (n_served * (n_served * a_days"
-                       " - n_orders * s_days)) END AS BIGINT)")
-                .alias("wq_days_e6")))
-
-
-_EGO_SQL = f"""
-WITH m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), deg AS (
-  SELECT term AS node, CAST(count(*) AS BIGINT) AS n FROM (
-    SELECT a AS term FROM e UNION ALL SELECT b FROM e
-  ) GROUP BY term
-), tri AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS t FROM (
-    SELECT e1.a AS node FROM e e1 JOIN e e2 ON e2.a = e1.b
-    JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-    UNION ALL
-    SELECT e1.b FROM e e1 JOIN e e2 ON e2.a = e1.b
-    JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-    UNION ALL
-    SELECT e2.b FROM e e1 JOIN e e2 ON e2.a = e1.b
-    JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-  ) GROUP BY node
-)
-SELECT deg.node, deg.n AS n_alters,
-       CAST(coalesce(tri.t, 0) AS BIGINT) AS ego_ties,
-       CAST((deg.n * deg.n - 2 * coalesce(tri.t, 0)) * 1000000 // deg.n
-            AS BIGINT) AS effective_size_e6,
-       CAST(CASE WHEN deg.n >= 2
-                 THEN 2 * coalesce(tri.t, 0) * 1000000
-                      // (deg.n * (deg.n - 1)) ELSE 0 END AS BIGINT)
-           AS ego_density_e6
-FROM deg LEFT JOIN tri ON tri.node = deg.node
-"""
-
-
-@register("kg_ego_effective_size", _EGO_SQL)
-def kg_ego_effective_size(spark, sf_dir):
-    """Burt's structural-hole metrics per ego: effective size
-    n − 2t/n (alters minus the redundancy their mutual ties create —
-    t = ties among the ego's neighbors = the ego's triangle count) and
-    ego-network density 2t/(n(n−1)) — the brokerage lens next to
-    kg_triangles_docs' clustering coefficient (same ingredients, the
-    social-capital reading). Exact e6 integer quotients; oracle reuses
-    the oriented-triangle census with per-corner explosion. Plan: degree
-    + triangle aggregates over the memoized edge table — at any graph
-    scale the same two shuffles the triangle census already pays."""
-    e = _cooc_edges(spark, sf_dir, 2).select(
-        F.col("term_a").alias("a"), F.col("term_b").alias("b"))
-    deg = (e.select(F.col("a").alias("node"))
-           .unionAll(e.select("b"))
-           .groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("n")))
-    e1 = e
-    e2 = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    e3 = e.select(F.col("a").alias("a3"), F.col("b").alias("c3"))
-    tris = (e1.join(e2, "b")
-            .join(e3, (F.col("a") == F.col("a3"))
-                  & (F.col("c") == F.col("c3")))
-            .select("a", "b", "c"))
-    corners = (tris.select(F.col("a").alias("node"))
-               .unionAll(tris.select("b"))
-               .unionAll(tris.select("c")))
-    tri = corners.groupBy("node").agg(F.count(F.lit(1)).cast("long")
-                                      .alias("t"))
-    return (deg.join(tri, "node", "left")
-            .select("node", F.col("n").alias("n_alters"),
-                    F.coalesce("t", F.lit(0)).cast("long")
-                    .alias("ego_ties"),
-                    F.expr("CAST((n * n - 2 * coalesce(t, 0)) * 1000000"
-                           " div n AS BIGINT)").alias("effective_size_e6"),
-                    F.expr("CAST(CASE WHEN n >= 2 THEN 2 * coalesce(t, 0)"
-                           " * 1000000 div (n * (n - 1)) ELSE 0 END"
-                           " AS BIGINT)").alias("ego_density_e6")))
-
-
-# Gumbel method-of-moments constants, e9-rounded once and injected into
-# both engines (√6/π, Euler-Mascheroni, and the T=12 return-level factor
-# c_T = −ln(−ln(1 − 1/T)))
-_GUM_SQRT6_PI_E9 = round(_math.sqrt(6.0) / _math.pi * 1e9)
-_GUM_EULER_E9 = round(0.5772156649015329 * 1e9)
-_GUM_CT12_E9 = round(-_math.log(-_math.log(1 - 1 / 12)) * 1e9)
-
-
-_GUMBEL_SQL = f"""
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS HUGEINT) AS x
-  FROM events GROUP BY 1
-), t AS (
-  SELECT x, (row_number() OVER (ORDER BY d) - 1) // 5 AS blk FROM daily
-), bm AS (
-  SELECT blk, max(x) AS mx FROM t GROUP BY blk HAVING count(*) = 5
-), s AS (
-  SELECT CAST(count(*) AS HUGEINT) AS nb, sum(mx) AS sm,
-         sum(mx * mx) AS smm
-  FROM bm
-), fit AS (
-  SELECT nb, sm, smm,
-         CAST(floor({_GUM_SQRT6_PI_E9} * sqrt(CAST(nb * smm - sm * sm
-                                                   AS DOUBLE))
-                    / (CAST(nb AS DOUBLE) * 1000.0) + 0.5) AS HUGEINT)
-             AS beta
-  FROM s
-)
-SELECT CAST(nb AS BIGINT) AS n_blocks,
-       CAST(sm * 1000000 // nb AS BIGINT) AS mean_e6,
-       CAST(nb * smm - sm * sm AS BIGINT) AS var_num,
-       CAST(beta AS BIGINT) AS beta_e6,
-       CAST(sm * 1000000 // nb
-            - {_GUM_EULER_E9} * beta // 1000000000 AS BIGINT) AS loc_e6,
-       CAST(sm * 1000000 // nb - {_GUM_EULER_E9} * beta // 1000000000
-            + {_GUM_CT12_E9} * beta // 1000000000 AS BIGINT)
-           AS return_level_12_e6
-FROM fit
-"""
-
-
-@register("q_events_gumbel_fit", _GUMBEL_SQL)
-def q_events_gumbel_fit(spark, sf_dir):
-    """Gumbel block-maxima fit (method of moments) over 5-day maxima of
-    the daily event volume — the BLOCK-MAXIMA half of extreme-value
-    theory next to q_events_evt_mean_excess's peaks-over-threshold half:
-    β̂ = s·√6/π and μ̂ = m̄ − γβ̂ with √6/π, the Euler-Mascheroni γ and
-    the T=12 return-level factor −ln(−ln(1−1/T)) all e9-rounded ONCE in
-    Python and INJECTED (no transcendental runs in either engine); the
-    block variance is an exact integer numerator and ONE sqrt produces
-    β, floored at e6 before every reuse so all three engine-side
-    expressions share the identical integer. Plan: one daily aggregate,
-    one 5-day block max, a 3-cell reduction."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast(dec).alias("x")))
-    t = daily.select(
-        "x", ((F.row_number().over(Window.orderBy("d")) - 1) / 5)
-        .cast("long").alias("blk"))
-    cnt = t.groupBy("blk").agg(F.count(F.lit(1)).alias("cnt"),
-                               F.max("x").alias("mx"))
-    bm = cnt.filter(F.col("cnt") == 5).select("blk", "mx")
-    s = bm.agg(F.count(F.lit(1)).cast(dec).alias("nb"),
-               F.sum("mx").alias("sm"),
-               F.sum(F.col("mx") * F.col("mx")).alias("smm"))
-    fit = s.withColumn("beta", F.expr(
-        f"CAST(floor({_GUM_SQRT6_PI_E9} * sqrt(CAST(nb * smm - sm * sm"
-        f" AS DOUBLE)) / (CAST(nb AS DOUBLE) * 1000.0) + 0.5)"
-        f" AS DECIMAL(38,0))"))
-    return fit.select(
-        F.col("nb").cast("long").alias("n_blocks"),
-        F.expr("CAST(sm * 1000000 div nb AS BIGINT)").alias("mean_e6"),
-        F.expr("CAST(nb * smm - sm * sm AS BIGINT)").alias("var_num"),
-        F.col("beta").cast("long").alias("beta_e6"),
-        F.expr(f"CAST(sm * 1000000 div nb - {_GUM_EULER_E9} * beta"
-               f" div 1000000000 AS BIGINT)").alias("loc_e6"),
-        F.expr(f"CAST(sm * 1000000 div nb - {_GUM_EULER_E9} * beta"
-               f" div 1000000000 + {_GUM_CT12_E9} * beta"
-               f" div 1000000000 AS BIGINT)").alias("return_level_12_e6"))
-
-
-_PACF_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS HUGEINT) AS x
-  FROM events GROUP BY 1
-), t AS (
-  SELECT x, row_number() OVER (ORDER BY d) AS rn FROM daily
-), g AS (SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS s FROM t),
-ck AS (
-  SELECT k.k, sum((g.n * a.x - g.s) * (g.n * b.x - g.s)) AS c
-  FROM (SELECT unnest([0, 1, 2, 3]) AS k) k
-  CROSS JOIN g JOIN t a ON TRUE JOIN t b ON b.rn = a.rn + k.k
-  GROUP BY k.k
-), r AS (
-  SELECT max(CASE WHEN k = 1 THEN CASE WHEN c >= 0
-                  THEN c * 1000000 // c0 ELSE -((-c) * 1000000 // c0) END
-             END) AS r1,
-         max(CASE WHEN k = 2 THEN CASE WHEN c >= 0
-                  THEN c * 1000000 // c0 ELSE -((-c) * 1000000 // c0) END
-             END) AS r2,
-         max(CASE WHEN k = 3 THEN CASE WHEN c >= 0
-                  THEN c * 1000000 // c0 ELSE -((-c) * 1000000 // c0) END
-             END) AS r3
-  FROM ck CROSS JOIN (SELECT c AS c0 FROM ck WHERE k = 0)
-  WHERE k > 0
-), phi AS (
-  SELECT r1, r2, r3,
-         r2 * 1000000 - r1 * r1 AS n2,
-         CAST(1000000000000 AS HUGEINT) - r1 * r1 AS d2,
-         (CAST(1000000000000 AS HUGEINT) * r3 - 2 * r1 * r2 * 1000000
-          + r1 * r2 * r2 - r1 * r1 * r3 + r1 * r1 * r1) AS n3,
-         (CAST(1000000000000 AS HUGEINT) * 1000000
-          - 2 * r1 * r1 * 1000000 + 2 * r1 * r1 * r2 - r2 * r2 * 1000000)
-             AS d3
-  FROM r
-)
-SELECT 1 AS k, CAST(r1 AS BIGINT) AS pacf_e6 FROM phi
-UNION ALL
-SELECT 2, CAST(CASE WHEN n2 >= 0 THEN n2 * 1000000 // d2
-               ELSE -((-n2) * 1000000 // d2) END AS BIGINT) FROM phi
-UNION ALL
-SELECT 3, CAST(CASE WHEN n3 >= 0 THEN n3 * 1000000 // d3
-               ELSE -((-n3) * 1000000 // d3) END AS BIGINT) FROM phi
-"""
-
-
-@register("q_events_pacf", _PACF_SQL)
-def q_events_pacf(spark, sf_dir):
-    """Partial autocorrelations (lags 1-3) of the daily series via the
-    Yule-Walker TOEPLITZ DETERMINANTS (Cramér's rule) instead of the
-    sequential Durbin-Levinson recursion — φ₂₂ = (r₂−r₁²)/(1−r₁²) and
-    φ₃₃ = (r₃−2r₁r₂+r₁r₂²−r₁²r₃+r₁³)/(1−2r₁²+2r₁²r₂−r₂²) are
-    HOMOGENEOUS ratios, so they evaluate exactly as integer polynomials
-    over the e6-rounded autocorrelations (documented rounding point;
-    both engines share the identical r's), with every signed quotient
-    sign-decomposed so floor-vs-truncate never diverges. The AR-order
-    identification companion of q_events_acf_bartlett. Plan: one daily
-    aggregate, a 4-lag shifted self-join, then constant-size algebra."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast(dec).alias("x")))
-    t = daily.select("x", F.row_number().over(Window.orderBy("d"))
-                     .alias("rn"))
-    g = t.agg(F.count(F.lit(1)).cast(dec).alias("n"),
-              F.sum("x").alias("s"))
-    ks = spark.range(0, 4).select(F.col("id").alias("k"))
-    a = t.select(F.col("x").alias("xa"), F.col("rn").alias("ra"))
-    b = t.select(F.col("x").alias("xb"), F.col("rn").alias("rb"))
-    ck = (ks.crossJoin(a).crossJoin(F.broadcast(g))
-          .join(b, F.col("rb") == F.col("ra") + F.col("k"))
-          .groupBy("k")
-          .agg(F.sum((F.col("n") * F.col("xa") - F.col("s"))
-                     * (F.col("n") * F.col("xb") - F.col("s")))
-               .alias("c")))
-    c0 = ck.filter(F.col("k") == 0).select(F.col("c").alias("c0"))
-    sdiv = ("CASE WHEN c >= 0 THEN c * 1000000 div c0"
-            " ELSE -((-c) * 1000000 div c0) END")
-    r = (ck.filter(F.col("k") > 0).crossJoin(F.broadcast(c0))
-         .groupBy()
-         .agg(*[F.max(F.when(F.col("k") == i, F.expr(sdiv)))
-                .alias(f"r{i}") for i in (1, 2, 3)]))
-    phi = r.select(
-        "r1", "r2", "r3",
-        F.expr("r2 * 1000000 - r1 * r1").cast(dec).alias("n2"),
-        F.expr("CAST(1000000000000 AS DECIMAL(38,0)) - r1 * r1")
-        .alias("d2"),
-        F.expr("CAST(1000000000000 AS DECIMAL(38,0)) * r3"
-               " - 2 * r1 * r2 * 1000000 + r1 * r2 * r2 - r1 * r1 * r3"
-               " + r1 * r1 * r1").alias("n3"),
-        F.expr("CAST(1000000000000 AS DECIMAL(38,0)) * 1000000"
-               " - 2 * r1 * r1 * 1000000 + 2 * r1 * r1 * r2"
-               " - r2 * r2 * 1000000").alias("d3"))
-    sd = ("CASE WHEN {n} >= 0 THEN {n} * 1000000 div {d}"
-          " ELSE -((-{n}) * 1000000 div {d}) END")
-    out1 = phi.select(F.lit(1).alias("k"),
-                      F.col("r1").cast("long").alias("pacf_e6"))
-    out2 = phi.select(F.lit(2),
-                      F.expr("CAST(" + sd.format(n="n2", d="d2")
-                             + " AS BIGINT)"))
-    out3 = phi.select(F.lit(3),
-                      F.expr("CAST(" + sd.format(n="n3", d="d3")
-                             + " AS BIGINT)"))
-    return out1.unionAll(out2).unionAll(out3)
-
-
-_TRI_SIG_SQL = f"""
-WITH m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), deg AS (
-  SELECT term, CAST(count(*) AS HUGEINT) AS d FROM (
-    SELECT a AS term FROM e UNION ALL SELECT b FROM e
-  ) GROUP BY term
-), tri AS (
-  SELECT CAST(count(*) AS HUGEINT) AS t
-  FROM e e1 JOIN e e2 ON e2.a = e1.b
-  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-), s AS (
-  SELECT sum(d * (d - 1)) AS aa, sum(d) AS bb FROM deg
-)
-SELECT CAST(tri.t AS BIGINT) AS n_triangles,
-       CAST(s.aa AS BIGINT) AS sum_d_dm1,
-       CAST(s.bb AS BIGINT) AS sum_d,
-       CAST(s.aa * s.aa * s.aa * 1000000 // (6 * s.bb * s.bb * s.bb)
-            AS BIGINT) AS expected_e6,
-       CAST(tri.t * 6 * s.bb * s.bb * s.bb * 1000000
-            // (s.aa * s.aa * s.aa) AS BIGINT) AS obs_over_exp_e6
-FROM tri CROSS JOIN s
-"""
-
-
-@register("kg_triangle_significance", _TRI_SIG_SQL)
-def kg_triangle_significance(spark, sf_dir):
-    """Triangle-count significance vs the CONFIGURATION-MODEL null
-    (Newman): a degree-preserving random graph expects
-    E[T] = (Σd(d−1)/Σd)³/6 triangles, so obs/expected ≫ 1 is the
-    clustering signal that survives degree effects (the null-model lens
-    kg_transitivity_docs lacks — raw clustering can be high purely from
-    hubs). Both the expectation and the ratio are exact integer
-    quotients of degree power sums. Plan: the degree aggregate + the
-    oriented-triangle census the other graph queries already pay."""
-    e = _cooc_edges(spark, sf_dir, 2).select(
-        F.col("term_a").alias("a"), F.col("term_b").alias("b"))
-    dec = "decimal(38,0)"
-    deg = (e.select(F.col("a").alias("term"))
-           .unionAll(e.select("b"))
-           .groupBy("term").agg(F.count(F.lit(1)).cast(dec).alias("d")))
-    e2 = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    e3 = e.select(F.col("a").alias("a3"), F.col("b").alias("c3"))
-    tri = (e.join(e2, "b")
-           .join(e3, (F.col("a") == F.col("a3"))
-                 & (F.col("c") == F.col("c3")))
-           .agg(F.count(F.lit(1)).cast(dec).alias("t")))
-    s = deg.agg(F.sum(F.col("d") * (F.col("d") - 1)).alias("aa"),
-                F.sum("d").alias("bb"))
-    return (tri.crossJoin(F.broadcast(s))
-            .select(F.col("t").cast("long").alias("n_triangles"),
-                    F.col("aa").cast("long").alias("sum_d_dm1"),
-                    F.col("bb").cast("long").alias("sum_d"),
-                    F.expr("CAST(aa * aa * aa * 1000000"
-                           " div (6 * bb * bb * bb) AS BIGINT)")
-                    .alias("expected_e6"),
-                    F.expr("CAST(t * 6 * bb * bb * bb * 1000000"
-                           " div (aa * aa * aa) AS BIGINT)")
-                    .alias("obs_over_exp_e6")))
-
-
-_CROSTON_ALPHA = 0.2
-
-
-_CROSTON_SQL = f"""
-WITH RECURSIVE d AS (
-  SELECT p.p_type, CAST(o.o_orderdate AS DATE) AS day,
-         CAST(sum(CAST(l.l_quantity AS BIGINT)) AS BIGINT) AS q
-  FROM lineitem l
-  JOIN orders o ON o.o_orderkey = l.l_orderkey
-  JOIN part p ON p.p_partkey = l.l_partkey
-  GROUP BY 1, 2
-), nz AS (
-  SELECT p_type, day, q,
-         row_number() OVER (PARTITION BY p_type ORDER BY day) AS rn,
-         CAST(coalesce(date_diff('day',
-              lag(day) OVER (PARTITION BY p_type ORDER BY day), day), 1)
-              AS BIGINT) AS gap
-  FROM d WHERE q > 0
-), cr AS (
-  SELECT p_type, rn, CAST(q AS DOUBLE) AS z, CAST(1.0 AS DOUBLE) AS p
-  FROM nz WHERE rn = 1
-  UNION ALL
-  SELECT nz.p_type, nz.rn,
-         {_CROSTON_ALPHA!r} * CAST(nz.q AS DOUBLE)
-           + {1 - _CROSTON_ALPHA!r} * cr.z,
-         {_CROSTON_ALPHA!r} * CAST(nz.gap AS DOUBLE)
-           + {1 - _CROSTON_ALPHA!r} * cr.p
-  FROM cr JOIN nz ON nz.p_type = cr.p_type AND nz.rn = cr.rn + 1
-), fin AS (
-  SELECT cr.p_type, cr.rn, cr.z, cr.p
-  FROM cr JOIN (SELECT p_type, max(rn) AS mx FROM nz GROUP BY 1) m
-    ON m.p_type = cr.p_type AND m.mx = cr.rn
-)
-SELECT p_type, CAST(rn AS BIGINT) AS n_demand_days,
-       CAST(floor(z * 1000000 + 0.5) AS BIGINT) AS z_e6,
-       CAST(floor(p * 1000000 + 0.5) AS BIGINT) AS p_e6,
-       CAST(floor(z / p * 1000000 + 0.5) AS BIGINT) AS forecast_e6
-FROM fin
-"""
-
-
-@register("q_orders_croston", _CROSTON_SQL)
-def q_orders_croston(spark, sf_dir):
-    """Croston's method per part type — THE intermittent-demand
-    forecaster (separate exponential smoothing of nonzero demand sizes z
-    and inter-demand intervals p at α=0.2; forecast = z/p per period):
-    the demand-side companion of q_orders_reorder_point. A sequential
-    float recurrence PER GROUP, replayed bit-identically (the Kalman
-    discipline): pandas loop per part type in the engine, recursive CTE
-    with DOUBLE state in the oracle, e6-rounded only at the end. The
-    first demand day seeds z=q, p=1."""
-    import pandas as pd
-
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders")
-    p = _t(spark, sf_dir, "part")
-    d = (li.join(o.select(F.col("o_orderkey").alias("l_orderkey"),
-                          "o_orderdate"), "l_orderkey")
-         .join(F.broadcast(p.select(F.col("p_partkey").alias("l_partkey"),
-                                    "p_type")), "l_partkey")
-         .groupBy("p_type", F.col("o_orderdate").cast("date").alias("day"))
-         .agg(F.sum(F.col("l_quantity").cast("long")).alias("q"))
-         .filter(F.col("q") > 0))
-
-    def croston(pdf: pd.DataFrame) -> pd.DataFrame:
-        import math
-        pdf = pdf.sort_values("day", ignore_index=True)
-        z = pe = 0.0
-        prev = None
-        for i, (day, q) in enumerate(zip(pdf["day"], pdf["q"])):
-            if i == 0:
-                z, pe = float(q), 1.0
-            else:
-                gap = float((day - prev).days)
-                z = _CROSTON_ALPHA * float(q) + (1 - _CROSTON_ALPHA) * z
-                pe = _CROSTON_ALPHA * gap + (1 - _CROSTON_ALPHA) * pe
-            prev = day
-        return pd.DataFrame(
-            [(pdf["p_type"].iloc[0], len(pdf),
-              int(math.floor(z * 1000000 + 0.5)),
-              int(math.floor(pe * 1000000 + 0.5)),
-              int(math.floor(z / pe * 1000000 + 0.5)))],
-            columns=["p_type", "n_demand_days", "z_e6", "p_e6",
-                     "forecast_e6"])
-
-    return d.groupBy("p_type").applyInPandas(
-        croston, schema="p_type string, n_demand_days long, z_e6 long,"
-                        " p_e6 long, forecast_e6 long")
-
-
-_LC_M = 1024
-
-
-_LC_SQL = f"""
-WITH k AS (
-  SELECT DISTINCT event_type,
-         CAST(CAST(concat('0x', substr(md5(concat('lc:',
-              CAST(event_id AS VARCHAR))), 1, 16)) AS UBIGINT)
-              % {_LC_M} AS BIGINT) AS bkt,
-         event_id
-  FROM events
-), agg AS (
-  SELECT event_type, CAST(count(DISTINCT event_id) AS BIGINT) AS n_exact,
-         CAST(count(DISTINCT bkt) AS BIGINT) AS n_busy
-  FROM k GROUP BY event_type
-)
-SELECT event_type, n_exact, n_busy,
-       CAST({_LC_M} - n_busy AS BIGINT) AS n_zero,
-       CAST(CASE WHEN n_busy < {_LC_M}
-                 THEN floor({_LC_M} * ln({_LC_M}.0
-                      / CAST({_LC_M} - n_busy AS DOUBLE)) * 1000000 + 0.5)
-            END AS BIGINT) AS lc_est_e6
-FROM agg
-"""
-
-
-@register("sketch_linear_counting", _LC_SQL)
-def sketch_linear_counting(spark, sf_dir):
-    """Linear (probabilistic) counting (Whang et al., TODS 1990) — the
-    small-range estimator HLL's correction regime defers to, as its own
-    oracled op: md5-derived occupancy of a 1024-bit bitmap, estimate
-    m·ln(m/zeros) (one ln of an exact integer ratio), NULL when the map
-    saturates. The n_exact column rides along so the estimator's error
-    is visible. One distinct aggregate; the bitmap is register-scale."""
-    e = _t(spark, sf_dir, "events")
-    bkt = (F.conv(F.substring(F.md5(F.concat(
-        F.lit("lc:"), F.col("event_id").cast("string"))), 1, 16), 16, 10)
-        .cast("decimal(38,0)") % _LC_M).cast("long")
-    agg = (e.select("event_type", "event_id", bkt.alias("bkt"))
-           .groupBy("event_type")
-           .agg(F.countDistinct("event_id").cast("long").alias("n_exact"),
-                F.countDistinct("bkt").cast("long").alias("n_busy")))
-    return agg.select(
-        "event_type", "n_exact", "n_busy",
-        (F.lit(_LC_M) - F.col("n_busy")).cast("long").alias("n_zero"),
-        F.expr(f"CAST(CASE WHEN n_busy < {_LC_M}"
-               f" THEN floor({_LC_M} * ln({_LC_M}.0"
-               f" / CAST({_LC_M} - n_busy AS DOUBLE)) * 1000000 + 0.5)"
-               f" END AS BIGINT)").alias("lc_est_e6"))
-
-
-_KATZ_SQL = f"""
-WITH m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), u AS MATERIALIZED (
-  SELECT a AS src, b AS dst FROM e UNION ALL SELECT b, a FROM e
-), p1 AS (
-  SELECT src AS x, dst AS z, CAST(1 AS HUGEINT) AS w FROM u
-), p2 AS (
-  SELECT a.src AS x, b.dst AS z, CAST(count(*) AS HUGEINT) AS w
-  FROM u a JOIN u b ON b.src = a.dst
-  GROUP BY 1, 2
-), p3 AS (
-  SELECT a.src AS x, c.dst AS z, CAST(count(*) AS HUGEINT) AS w
-  FROM u a JOIN u b ON b.src = a.dst JOIN u c ON c.src = b.dst
-  GROUP BY 1, 2
-), katz AS (
-  SELECT x, z, CAST(sum(w) AS BIGINT) AS katz_x512
-  FROM (
-    SELECT x, z, w * 64 AS w FROM p1
-    UNION ALL SELECT x, z, w * 8 FROM p2
-    UNION ALL SELECT x, z, w FROM p3
-  ) GROUP BY x, z
-)
-SELECT x, z, katz_x512 FROM katz WHERE x < z
-"""
-
-
-@register("kg_katz_index", _KATZ_SQL)
-def kg_katz_index(spark, sf_dir):
-    """Katz similarity index truncated at path length 3 with β = 1/8:
-    Σ_k β^k·paths_k(x,z), cross-multiplied by 8³ so the score is the
-    EXACT integer 64·A + 8·A² + A³ (walk counts, not simple paths — the
-    textbook definition) — the path-based link predictor next to the
-    neighborhood-based Adamic-Adar/CN family (kg_link_scores_docs):
-    Katz sees length-3 evidence those cannot. Upper-triangle output.
-    Plan: two frontier equi-joins (A², A³) over the doubled edge list +
-    one grouped sum — each power is the standard sparse matrix-product
-    shuffle at any graph scale."""
-    e = _cooc_edges(spark, sf_dir, 2).select(
-        F.col("term_a").alias("a"), F.col("term_b").alias("b"))
-    dec = "decimal(38,0)"
-    u = (e.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-         .unionAll(e.select("b", "a")))
-    p1 = u.select(F.col("src").alias("x"), F.col("dst").alias("z"),
-                  F.lit(64).cast(dec).alias("w"))
-    ab = u.select(F.col("src").alias("x"), F.col("dst").alias("m1"))
-    bc = u.select(F.col("src").alias("m1"), F.col("dst").alias("z"))
-    p2 = (ab.join(bc, "m1").groupBy("x", "z")
-          .agg((F.count(F.lit(1)) * 8).cast(dec).alias("w")))
-    cd = u.select(F.col("src").alias("m2"), F.col("dst").alias("z"))
-    p3 = (ab.join(bc.select(F.col("m1"), F.col("z").alias("m2")), "m1")
-          .join(cd, "m2")
-          .groupBy("x", "z")
-          .agg(F.count(F.lit(1)).cast(dec).alias("w")))
-    katz = (p1.unionAll(p2).unionAll(p3)
-            .groupBy("x", "z")
-            .agg(F.sum("w").cast("long").alias("katz_x512")))
-    return katz.filter(F.col("x") < F.col("z"))
-
-
-_EOQ_SQL = """
-WITH d AS (
-  SELECT p.p_type,
-         CAST(sum(CAST(l.l_quantity AS BIGINT)) AS HUGEINT) AS demand,
-         CAST(count(DISTINCT l.l_orderkey) AS HUGEINT) AS n_orders
-  FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
-  GROUP BY 1
-)
-SELECT p_type, CAST(demand AS BIGINT) AS annual_demand,
-       CAST(n_orders AS BIGINT) AS n_orders,
-       CAST(floor(sqrt(CAST(2 * demand * 50 AS DOUBLE) / 3.0) * 1000000
-                  + 0.5) AS BIGINT) AS eoq_e6,
-       CAST(floor(CAST(demand AS DOUBLE)
-                  / (sqrt(CAST(2 * demand * 50 AS DOUBLE) / 3.0))
-                  * 1000000 + 0.5) AS BIGINT) AS orders_per_period_e6
-FROM d
-"""
-
-
-@register("q_orders_eoq", _EOQ_SQL)
-def q_orders_eoq(spark, sf_dir):
-    """Economic order quantity per part type (Harris-Wilson):
-    EOQ = √(2DS/H) with ordering cost S=50 and holding cost H=3 per
-    unit-period — ONE sqrt of an exact integer ratio, plus the implied
-    order frequency D/EOQ from the same double (identical expression
-    trees both engines). Completes the inventory-policy trio with
-    q_orders_reorder_point (when to order) and q_orders_croston (what
-    demand to expect). One grouped scan."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
-    d = (li.join(F.broadcast(p.select(F.col("p_partkey")
-                                      .alias("l_partkey"), "p_type")),
-                 "l_partkey")
-         .groupBy("p_type")
-         .agg(F.sum(F.col("l_quantity").cast("long"))
-              .cast("decimal(38,0)").alias("demand"),
-              F.countDistinct("l_orderkey").cast("long").alias("n_orders")))
-    return d.select(
-        "p_type", F.col("demand").cast("long").alias("annual_demand"),
-        F.col("n_orders").cast("long").alias("n_orders"),
-        F.expr("CAST(floor(sqrt(CAST(2 * demand * 50 AS DOUBLE) / 3.0)"
-               " * 1000000 + 0.5) AS BIGINT)").alias("eoq_e6"),
-        F.expr("CAST(floor(CAST(demand AS DOUBLE)"
-               " / (sqrt(CAST(2 * demand * 50 AS DOUBLE) / 3.0))"
-               " * 1000000 + 0.5) AS BIGINT)")
-        .alias("orders_per_period_e6"))
-
-
-def _adpcm_fixture_sql(n: int = 20, seed: int = 42) -> str:
-    """Oracle for the REAL IMA-ADPCM WAV path: tones are pure formulas of
-    (id, t); the encode→decode round trip is re-derived with an
-    INDEPENDENT pure-Python stepper (dict-driven nibble arithmetic vs the
-    branch chain in sources/audio_meta) including the hold-the-predictor
-    block padding — a wrong step-table entry, index clamp, nibble order
-    or block-header seed flips the hash."""
-    import math
-
-    from knowledge_extraction_pipeline_spark.sources.audio_meta import (
-        _IMA_SPB,
-        IMA_INDEX_TABLE,
-        IMA_STEP_TABLE,
-    )
-
-    def enc(sample, pred, idx):
-        step = IMA_STEP_TABLE[idx]
-        diff = sample - pred
-        sign = 8 if diff < 0 else 0
-        diff = abs(diff)
-        nib = sign
-        mag = 0
-        for bit, frac in ((4, step), (2, step >> 1), (1, step >> 2)):
-            if diff >= frac:
-                nib |= bit
-                diff -= frac
-                mag += frac
-        mag += step >> 3
-        pred = pred - mag if sign else pred + mag
-        pred = max(-32768, min(32767, pred))
-        idx = max(0, min(88, idx + IMA_INDEX_TABLE[nib]))
-        return nib, pred, idx
-
-    rows = []
-    for i in range(n):
-        rate = 8000
-        ns = 500 + (i % 4) * 101
-        freq = 160.0 + (i * 47 + seed) % 440
-        src = [int(math.sin(2 * math.pi * freq * t / rate) * 12000)
-               for t in range(ns)]
-        # decode in LOCKSTEP with the encode: IMA ADPCM's encoder
-        # predictor is by construction the decoder predictor, so this
-        # replay yields the exact decoded samples
-        decoded = []
-        eidx = 0
-        pos = 0
-        while pos < len(src):
-            chunk = src[pos:pos + _IMA_SPB]
-            pred = chunk[0]
-            decoded.append(pred)
-            count = 0
-            for s in chunk[1:]:
-                nib, pred, eidx = enc(s, pred, eidx)
-                decoded.append(pred)
-                count += 1
-            while count < _IMA_SPB - 1:
-                nib, pred, eidx = enc(pred, pred, eidx)
-                decoded.append(pred)
-                count += 1
-            pos += _IMA_SPB
-        s2 = sum(v * v for v in decoded)
-        rms = math.sqrt(s2 / len(decoded))
-        zc = sum(1 for a, b in zip(decoded[:-1], decoded[1:])
-                 if (a < 0) != (b < 0))
-        rows.append(f"({i}, {rate}, {len(decoded)},"
-                    f" {len(decoded) / rate!r}, {rms!r}, {zc})")
-    return _audio_feature_values_sql(rows)
-
-
-@register("multimodal_adpcm_features", _adpcm_fixture_sql())
-def multimodal_adpcm_features(spark, sf_dir):
-    """REAL IMA/DVI ADPCM WAV decode end to end
-    (sources/audio_meta.decode_wav_adpcm): format-0x11 RIFF walk
-    (20-byte fmt with samplesPerBlock, fact chunk), per-block seed
-    predictor/index headers, 4-bit nibbles little-end-first through the
-    exact integer step/index-table recurrence — the adaptive 4-bit
-    telephony codec next to the G.711 companders (this one carries
-    STATE across samples; they don't). The oracle replays the
-    encode→decode round trip with an independent pure-Python stepper;
-    ADPCM's encoder predictor IS the decoder predictor, so the replay
-    is exact, not approximate."""
-    from .sources.audio_meta import (
-        extract_adpcm_features,
-        synthetic_adpcm_media,
-    )
-    out = extract_adpcm_features(synthetic_adpcm_media(spark, 20))
-    return out.select("media_id",
-                      F.col("sample_rate").cast("int").alias("sample_rate"),
-                      F.col("n_samples").cast("long").alias("n_samples"),
-                      "duration_s", "rms",
-                      F.col("zero_crossings").cast("long")
-                      .alias("zero_crossings"))
-
-
-_BASS_SQL = """
-WITH first_seen AS (
-  SELECT user_id, min(date_trunc('hour', CAST(ts AS TIMESTAMP))) AS d0
-  FROM events GROUP BY 1
-), adopt AS (
-  SELECT d0 AS d, CAST(count(*) AS HUGEINT) AS nt FROM first_seen
-  GROUP BY 1
-), series AS (
-  SELECT d, nt,
-         coalesce(sum(nt) OVER (ORDER BY d ROWS BETWEEN UNBOUNDED
-                                PRECEDING AND 1 PRECEDING), 0) AS nprev
-  FROM adopt
-), x AS (
-  SELECT nt AS y, CAST(1 AS HUGEINT) AS x0, nprev AS x1,
-         nprev * nprev AS x2
-  FROM series
-), g AS (
-  SELECT CAST(count(*) AS HUGEINT) AS s00, sum(x1) AS s01, sum(x2) AS s02,
-         sum(x1 * x1) AS s11, sum(x1 * x2) AS s12, sum(x2 * x2) AS s22,
-         sum(y) AS t0, sum(y * x1) AS t1, sum(y * x2) AS t2
-  FROM x
-), det AS (
-  SELECT s00, s01, s02, s11, s12, s22, t0, t1, t2,
-         s00 * (s11 * s22 - s12 * s12) - s01 * (s01 * s22 - s12 * s02)
-           + s02 * (s01 * s12 - s11 * s02) AS dd,
-         t0 * (s11 * s22 - s12 * s12) - s01 * (t1 * s22 - s12 * t2)
-           + s02 * (t1 * s12 - s11 * t2) AS da,
-         s00 * (t1 * s22 - s12 * t2) - t0 * (s01 * s22 - s12 * s02)
-           + s02 * (s01 * t2 - t1 * s02) AS db,
-         s00 * (s11 * t2 - t1 * s12) - s01 * (s01 * t2 - t1 * s02)
-           + t0 * (s01 * s12 - s11 * s02) AS dc
-  FROM g
-)
-SELECT CAST(s00 AS BIGINT) AS n_periods,
-       CAST(CASE WHEN dd = 0 THEN NULL WHEN da >= 0
-            THEN da * 1000000000 // dd
-            ELSE -((-da) * 1000000000 // dd) END AS BIGINT) AS a_e9,
-       CAST(CASE WHEN dd = 0 THEN NULL WHEN db >= 0
-            THEN db * 1000000000 // dd
-            ELSE -((-db) * 1000000000 // dd) END AS BIGINT) AS b_e9,
-       CAST(CASE WHEN dd = 0 THEN NULL WHEN dc >= 0
-            THEN dc * 1000000000000000 // dd
-            ELSE -((-dc) * 1000000000000000 // dd) END AS BIGINT) AS c_e15
-FROM det
-"""
-
-
-@register("q_events_bass_diffusion", _BASS_SQL)
-def q_events_bass_diffusion(spark, sf_dir):
-    """Bass diffusion-model regression on daily user adoption (first-seen
-    users): the discrete Bass identity n_t = pM + (q−p)N_{t−1} −
-    (q/M)N²_{t−1} is a linear model in (1, N, N²), solved by CRAMER'S
-    RULE on the exact integer normal equations (the 3×3 determinant
-    expansion never divides until the final sign-decomposed e9/e15
-    quotients — the two-feature-OLS discipline extended to three). The
-    innovation/imitation decomposition of growth next to
-    q_events_cumulative_users (which only plots the curve); recovering
-    (p, q, M) from (a, b, c) is one quadratic root the caller applies.
-    Plan: one first-seen aggregate, one running window, one 9-cell
-    reduction."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    fs = e.groupBy("user_id").agg(
-        F.min(F.date_trunc("hour", F.col("ts").cast("timestamp")))
-        .alias("d0"))
-    adopt = fs.groupBy(F.col("d0").alias("d")).agg(
-        F.count(F.lit(1)).cast(dec).alias("nt"))
-    w = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, -1)
-    series = adopt.select(
-        "nt", F.coalesce(F.sum("nt").over(w), F.lit(0)).cast(dec)
-        .alias("nprev"))
-    x = series.select(F.col("nt").alias("y"),
-                      F.lit(1).cast(dec).alias("x0"),
-                      F.col("nprev").alias("x1"),
-                      (F.col("nprev") * F.col("nprev")).alias("x2"))
-    g = x.agg(F.count(F.lit(1)).cast(dec).alias("s00"),
-              F.sum("x1").alias("s01"), F.sum("x2").alias("s02"),
-              F.sum(F.col("x1") * F.col("x1")).alias("s11"),
-              F.sum(F.col("x1") * F.col("x2")).alias("s12"),
-              F.sum(F.col("x2") * F.col("x2")).alias("s22"),
-              F.sum("y").alias("t0"),
-              F.sum(F.col("y") * F.col("x1")).alias("t1"),
-              F.sum(F.col("y") * F.col("x2")).alias("t2"))
-    det = g.select(
-        "s00",
-        F.expr("s00 * (s11 * s22 - s12 * s12)"
-               " - s01 * (s01 * s22 - s12 * s02)"
-               " + s02 * (s01 * s12 - s11 * s02)").alias("dd"),
-        F.expr("t0 * (s11 * s22 - s12 * s12)"
-               " - s01 * (t1 * s22 - s12 * t2)"
-               " + s02 * (t1 * s12 - s11 * t2)").alias("da"),
-        F.expr("s00 * (t1 * s22 - s12 * t2)"
-               " - t0 * (s01 * s22 - s12 * s02)"
-               " + s02 * (s01 * t2 - t1 * s02)").alias("db"),
-        F.expr("s00 * (s11 * t2 - t1 * s12)"
-               " - s01 * (s01 * t2 - t1 * s02)"
-               " + t0 * (s01 * s12 - s11 * s02)").alias("dc"))
-    sd = ("CASE WHEN dd = 0 THEN NULL WHEN {n} >= 0"
-          " THEN {n} * {s} div dd"
-          " ELSE -((-{n}) * {s} div dd) END")
-    return det.select(
-        F.col("s00").cast("long").alias("n_periods"),
-        F.expr("CAST(" + sd.format(n="da", s="1000000000")
-               + " AS BIGINT)").alias("a_e9"),
-        F.expr("CAST(" + sd.format(n="db", s="1000000000")
-               + " AS BIGINT)").alias("b_e9"),
-        F.expr("CAST(" + sd.format(n="dc", s="1000000000000000")
-               + " AS BIGINT)").alias("c_e15"))
-
-
-_BURSTINESS_SQL = """
-WITH seq AS (
-  SELECT event_type,
-         CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS HUGEINT)
-           - CAST(floor(epoch(lag(CAST(ts AS TIMESTAMP))
-                 OVER (PARTITION BY event_type, user_id
-                       ORDER BY ts, event_id))) AS HUGEINT) AS gap
-  FROM events
-), g AS (
-  SELECT event_type, CAST(count(*) AS HUGEINT) AS n, sum(gap) AS s,
-         sum(gap * gap) AS ss
-  FROM seq WHERE gap IS NOT NULL GROUP BY 1
-)
-SELECT event_type, CAST(n AS BIGINT) AS n_gaps,
-       CAST(s * 1000000 // n AS BIGINT) AS mean_gap_e6,
-       CAST(floor((sqrt(CAST(n * ss - s * s AS DOUBLE)) - CAST(s AS DOUBLE))
-                  / (sqrt(CAST(n * ss - s * s AS DOUBLE)) + CAST(s AS DOUBLE))
-                  * 1000000 + 0.5) AS BIGINT) AS burstiness_e6
-FROM g
-"""
-
-
-@register("q_events_burstiness_param", _BURSTINESS_SQL)
-def q_events_burstiness_param(spark, sf_dir):
-    """Goh-Barabási burstiness parameter B = (σ−μ)/(σ+μ) of per-user
-    inter-event gaps, pooled per event type (B→−1 periodic, 0 Poisson,
-    →+1 bursty): with σ = √(nΣg²−S²)/n and μ = S/n the n cancels, so
-    B = (√V − S)/(√V + S) needs exactly ONE sqrt of the exact integer
-    variance numerator — both engines evaluate the identical expression
-    tree (and the floor-consistent epoch seconds from
-    q_events_token_bucket). The human-dynamics lens next to
-    q_events_bursts' threshold detector. Plan: one lag window per
-    (type, user), one grouped reduction."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    w = Window.partitionBy("event_type", "user_id").orderBy("ts",
-                                                            "event_id")
-    seq = e.select(
-        "event_type",
-        (F.unix_timestamp("ts").cast(dec)
-         - F.lag(F.unix_timestamp("ts").cast(dec)).over(w)).alias("gap"))
-    g = (seq.filter(F.col("gap").isNotNull())
-         .groupBy("event_type")
-         .agg(F.count(F.lit(1)).cast(dec).alias("n"),
-              F.sum("gap").alias("s"),
-              F.sum(F.col("gap") * F.col("gap")).alias("ss")))
-    return g.select(
-        "event_type", F.col("n").cast("long").alias("n_gaps"),
-        F.expr("CAST(s * 1000000 div n AS BIGINT)").alias("mean_gap_e6"),
-        F.expr("CAST(floor((sqrt(CAST(n * ss - s * s AS DOUBLE))"
-               " - CAST(s AS DOUBLE))"
-               " / (sqrt(CAST(n * ss - s * s AS DOUBLE))"
-               " + CAST(s AS DOUBLE)) * 1000000 + 0.5) AS BIGINT)")
-        .alias("burstiness_e6"))
-
-
-def _gesd_sql(k: int = 3) -> str:
-    head = """
-WITH d0 AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS HUGEINT) AS x
-  FROM events GROUP BY 1
-)"""
-    parts = []
-    outs = []
-    for r in range(1, k + 1):
-        prev = f"d{r - 1}"
-        parts.append(f""",
-s{r} AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS s, sum(x * x) AS ss
-  FROM {prev}
-), top{r} AS (
-  SELECT d, x, abs(s{r}.n * x - s{r}.s) AS adev, s{r}.n, s{r}.s, s{r}.ss
-  FROM {prev} CROSS JOIN s{r}
-  ORDER BY abs(s{r}.n * x - s{r}.s) DESC, d ASC LIMIT 1
-), d{r} AS (
-  SELECT p.d, p.x FROM {prev} p
-  WHERE p.d != (SELECT d FROM top{r})
-)""")
-        outs.append(f"""
-SELECT {r} AS round, d AS day, CAST(x AS BIGINT) AS x,
-       CAST(adev * adev * (n - 1) * 1000000
-            // (n * (n * ss - s * s)) AS BIGINT) AS g2_e6
-FROM top{r}""")
-    return head + "".join(parts) + " UNION ALL ".join(outs)
-
-
-@register("q_events_gesd_outliers", _gesd_sql())
-def q_events_gesd_outliers(spark, sf_dir):
-    """Generalized ESD (Rosner 1983) multi-outlier detection, k=3 rounds
-    UNROLLED: each round takes the Grubbs extreme-studentized deviate
-    (the fraction-free dev²(N−1)/(N(N·Σx²−S²)) identity of
-    q_events_grubbs) over the REMAINING days, emits the argmax day
-    (date-tie-broken) and removes it — masking-robust where a single
-    Grubbs pass is not (the Twitter-AnomalyDetection workhorse). Plan:
-    k sequential (reduce → top-1 → anti-filter) stages over the
-    calendar-sized series; the unroll is the oracle-replayable form of
-    the sequential removal."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    cur = (e.groupBy(F.col("ts").cast("date").alias("d"))
-           .agg(F.count(F.lit(1)).cast(dec).alias("x")))
-    # calendar-scale: persist each round's survivors so round r doesn't
-    # re-derive rounds 1..r-1 from the raw scan
-    cur = cur.persist()
-    outs = []
-    for r in range(1, 4):
-        s = cur.agg(F.count(F.lit(1)).cast(dec).alias("n"),
-                    F.sum("x").alias("s"),
-                    F.sum(F.col("x") * F.col("x")).alias("ss"))
-        dev = (cur.crossJoin(F.broadcast(s))
-               .select("d", "x", "n", "s", "ss",
-                       F.abs(F.col("n") * F.col("x") - F.col("s"))
-                       .alias("adev")))
-        w = Window.orderBy(F.desc("adev"), F.asc("d"))
-        top = (dev.withColumn("rn", F.row_number().over(w))
-               .filter(F.col("rn") == 1))
-        outs.append(top.select(
-            F.lit(r).alias("round"), F.col("d").alias("day"),
-            F.col("x").cast("long").alias("x"),
-            F.expr("CAST(adev * adev * (n - 1) * 1000000"
-                   " div (n * (n * ss - s * s)) AS BIGINT)")
-            .alias("g2_e6")))
-        cur = cur.join(top.select("d"), "d", "left_anti").persist()
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionAll(o)
-    return res
-
-
-_MORAN_SQL = f"""
-WITH m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), attr AS (
-  SELECT term, CAST(count(*) AS HUGEINT) AS x FROM m GROUP BY term
-), nodes AS (
-  SELECT attr.term, attr.x FROM attr
-  WHERE attr.term IN (SELECT a FROM e UNION SELECT b FROM e)
-), g AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS s FROM nodes
-), z AS (
-  SELECT term, g.n * x - g.s AS z FROM nodes CROSS JOIN g
-), num AS (
-  SELECT sum(za.z * zb.z) AS cross_sum, CAST(count(*) AS HUGEINT) AS tw
-  FROM e JOIN z za ON za.term = e.a JOIN z zb ON zb.term = e.b
-), den AS (SELECT sum(z * z) AS zz FROM z)
-SELECT CAST(g.n AS BIGINT) AS n_nodes, CAST(2 * num.tw AS BIGINT) AS sum_w,
-       CAST(CASE WHEN num.cross_sum >= 0
-                 THEN g.n * num.cross_sum * 1000000
-                      // (2 * num.tw * den.zz)
-                 ELSE -((g.n * (-num.cross_sum) * 1000000)
-                        // (2 * num.tw * den.zz)) END AS BIGINT)
-           AS moran_i_e6
-FROM g CROSS JOIN num CROSS JOIN den
-"""
-
-
-@register("kg_moran_i", _MORAN_SQL)
-def kg_moran_i(spark, sf_dir):
-    """Moran's I autocorrelation of a node ATTRIBUTE over the KG — does
-    document frequency cluster on the graph (hubs near hubs), the
-    graph-homophily lens next to kg_assortativity_docs (which
-    correlates DEGREES; this correlates an external attribute):
-    I = (n/ΣW)·Σ_{{ij}} w_ij z_i z_j / Σz_i² with binary undirected
-    weights, mean-cleared via z = n·x − S so everything is exact
-    integers until one sign-decomposed e6 quotient. Plan: one attribute
-    aggregate, one edge join against the z table, two reductions."""
-    e = _cooc_edges(spark, sf_dir, 2).select(
-        F.col("term_a").alias("a"), F.col("term_b").alias("b"))
-    dec = "decimal(38,0)"
-    d = _t(spark, sf_dir, "documents")
-    mm = kg_docs.doc_mentions(spark, d).select("doc_id", "term").distinct()
-    attr = mm.groupBy("term").agg(F.count(F.lit(1)).cast(dec).alias("x"))
-    nodes_in_e = (e.select(F.col("a").alias("term"))
-                  .union(e.select("b")).distinct())
-    nodes = attr.join(nodes_in_e, "term")
-    g = nodes.agg(F.count(F.lit(1)).cast(dec).alias("n"),
-                  F.sum("x").alias("s"))
-    z = (nodes.crossJoin(F.broadcast(g))
-         .select("term", (F.col("n") * F.col("x") - F.col("s"))
-                 .alias("z")))
-    num = (e.join(F.broadcast(z.select(F.col("term").alias("a"),
-                                       F.col("z").alias("za"))), "a")
-           .join(F.broadcast(z.select(F.col("term").alias("b"),
-                                      F.col("z").alias("zb"))), "b")
-           .agg(F.sum(F.col("za") * F.col("zb")).alias("cross_sum"),
-                F.count(F.lit(1)).cast(dec).alias("tw")))
-    den = z.agg(F.sum(F.col("z") * F.col("z")).alias("zz"))
-    return (g.crossJoin(num).crossJoin(den)
-            .select(F.col("n").cast("long").alias("n_nodes"),
-                    (F.lit(2) * F.col("tw")).cast("long").alias("sum_w"),
-                    F.expr("CAST(CASE WHEN cross_sum >= 0"
-                           " THEN n * cross_sum * 1000000"
-                           " div (2 * tw * zz)"
-                           " ELSE -((n * (-cross_sum) * 1000000)"
-                           " div (2 * tw * zz)) END AS BIGINT)")
-                    .alias("moran_i_e6")))
-
-
-_EWMA_LAMBDA = 0.2
-
-
-_EWMA_CHART_SQL = f"""
-WITH RECURSIVE daily AS (
-  SELECT CAST(ts AS DATE) AS d, CAST(count(*) AS HUGEINT) AS x
-  FROM events GROUP BY 1
-), t AS (
-  SELECT d, x, row_number() OVER (ORDER BY d) AS rn FROM daily
-), g AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS s, sum(x * x) AS ss
-  FROM t
-), ew AS (
-  SELECT rn, d, x, CAST(x AS DOUBLE) AS z,
-         CAST({(1 - _EWMA_LAMBDA) ** 2!r} AS DOUBLE) AS w
-  FROM t WHERE rn = 1
-  UNION ALL
-  SELECT t.rn, t.d, t.x,
-         {_EWMA_LAMBDA!r} * CAST(t.x AS DOUBLE)
-           + {1 - _EWMA_LAMBDA!r} * ew.z,
-         ew.w * {(1 - _EWMA_LAMBDA) ** 2!r}
-  FROM ew JOIN t ON t.rn = ew.rn + 1
-)
-SELECT ew.d, CAST(ew.x AS BIGINT) AS x,
-       CAST(floor(ew.z * 1000000 + 0.5) AS BIGINT) AS ewma_e6,
-       CAST(floor((CAST(g.s AS DOUBLE) / CAST(g.n AS DOUBLE)
-             + 3.0 * (sqrt(CAST(g.n * g.ss - g.s * g.s AS DOUBLE))
-                      / CAST(g.n AS DOUBLE))
-               * sqrt({_EWMA_LAMBDA / (2 - _EWMA_LAMBDA)!r} * (1.0 - ew.w)))
-             * 1000000 + 0.5) AS BIGINT) AS ucl_e6,
-       CAST(CASE WHEN ew.z > CAST(g.s AS DOUBLE) / CAST(g.n AS DOUBLE)
-                 + 3.0 * (sqrt(CAST(g.n * g.ss - g.s * g.s AS DOUBLE))
-                          / CAST(g.n AS DOUBLE))
-                   * sqrt({_EWMA_LAMBDA / (2 - _EWMA_LAMBDA)!r}
-                          * (1.0 - ew.w))
-                 OR ew.z < CAST(g.s AS DOUBLE) / CAST(g.n AS DOUBLE)
-                 - 3.0 * (sqrt(CAST(g.n * g.ss - g.s * g.s AS DOUBLE))
-                          / CAST(g.n AS DOUBLE))
-                   * sqrt({_EWMA_LAMBDA / (2 - _EWMA_LAMBDA)!r}
-                          * (1.0 - ew.w))
-            THEN 1 ELSE 0 END AS INTEGER) AS violation
-FROM ew CROSS JOIN g
-"""
-
-
-@register("q_events_ewma_chart", _EWMA_CHART_SQL)
-def q_events_ewma_chart(spark, sf_dir):
-    """EWMA control CHART (λ=0.2, the SPC companion of the plain
-    q_events_ewma smoother): z_t recursion plus the TIME-VARYING Lucas-
-    Saccucci limits μ ± 3σ√(λ/(2−λ)·(1−(1−λ)^{{2t}})) — the (1−λ)^{{2t}}
-    term is CARRIED through the recursion as a multiplicative state
-    variable (w ← w·(1−λ)², seeded (1−λ)²) so no pow() ever runs and
-    both engines step identical IEEE ops (the Kalman discipline); σ is
-    one sqrt of the exact integer variance numerator. Violations are
-    float comparisons of identical doubles — identical flags. Plan: one
-    daily aggregate, a calendar-scale recursion, a 3-cell reduction
-    broadcast."""
-    import pandas as pd
-
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    daily = (e.groupBy(F.col("ts").cast("date").alias("d"))
-             .agg(F.count(F.lit(1)).cast(dec).alias("x")))
-    g = daily.agg(F.count(F.lit(1)).cast(dec).alias("n"),
-                  F.sum("x").alias("s"),
-                  F.sum(F.col("x") * F.col("x")).alias("ss"))
-    src = daily.select(F.lit(1).alias("grp"), "d", "x") \
-        .crossJoin(F.broadcast(g))
-
-    lam = _EWMA_LAMBDA
-    fac = lam / (2 - lam)
-    om2 = (1 - lam) ** 2
-
-    def chart(pdf: pd.DataFrame) -> pd.DataFrame:
-        import math
-        pdf = pdf.sort_values("d", ignore_index=True)
-        n = float(pdf["n"].iloc[0])
-        s = float(pdf["s"].iloc[0])
-        ss = float(pdf["ss"].iloc[0])
-        mu = s / n
-        sig = math.sqrt(n * ss - s * s) / n
-        out = []
-        z = w = 0.0
-        for i, (d, x) in enumerate(zip(pdf["d"], pdf["x"])):
-            xf = float(x)
-            if i == 0:
-                z, w = xf, om2
-            else:
-                z = lam * xf + (1 - lam) * z
-                w = w * om2
-            half = 3.0 * sig * math.sqrt(fac * (1.0 - w))
-            ucl = mu + half
-            lcl = mu - half
-            out.append((d, int(x),
-                        int(math.floor(z * 1000000 + 0.5)),
-                        int(math.floor(ucl * 1000000 + 0.5)),
-                        1 if (z > ucl or z < lcl) else 0))
-        return pd.DataFrame(out, columns=["d", "x", "ewma_e6", "ucl_e6",
-                                          "violation"])
-
-    return src.groupBy("grp").applyInPandas(
-        chart, schema="d date, x long, ewma_e6 long, ucl_e6 long,"
-                      " violation int"
-    ).select("d", "x", "ewma_e6", "ucl_e6", "violation")
-
-
-_MOTIF4_SQL = f"""
-WITH m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), deg AS (
-  SELECT term, CAST(count(*) AS HUGEINT) AS d FROM (
-    SELECT a AS term FROM e UNION ALL SELECT b FROM e
-  ) GROUP BY term
-), tri AS (
-  SELECT CAST(count(*) AS HUGEINT) AS t
-  FROM e e1 JOIN e e2 ON e2.a = e1.b
-  JOIN e e3 ON e3.a = e1.a AND e3.b = e2.b
-), sq AS (
-  -- non-induced 4-cycles: each wedge counted ONCE per ordered endpoint
-  -- pair (u < v), each square pairs two wedges per diagonal and has two
-  -- diagonals, hence the final halving
-  SELECT CAST(coalesce(sum(p * (p - 1) // 2), 0) // 2 AS HUGEINT) AS c4
-  FROM (
-    SELECT x.a AS u, y.b AS v, CAST(count(*) AS HUGEINT) AS p
-    FROM (SELECT a, b FROM e UNION ALL SELECT b, a FROM e) x
-    JOIN (SELECT a, b FROM e UNION ALL SELECT b, a FROM e) y
-      ON y.a = x.b AND y.b > x.a
-    GROUP BY 1, 2
-  )
-), agg AS (
-  SELECT CAST((SELECT count(*) FROM e) AS HUGEINT) AS n_edges,
-         sum(d * (d - 1) // 2) AS wedges,
-         sum(d * (d - 1) * (d - 2) // 6) AS claws
-  FROM deg
-), pe AS (
-  SELECT sum((da.d - 1) * (db.d - 1)) AS epairs
-  FROM e JOIN deg da ON da.term = e.a JOIN deg db ON db.term = e.b
-)
-SELECT CAST(agg.n_edges AS BIGINT) AS n_edges,
-       CAST(agg.wedges AS BIGINT) AS wedges_p3,
-       CAST(agg.claws AS BIGINT) AS claws_k13,
-       CAST(tri.t AS BIGINT) AS triangles,
-       CAST(pe.epairs - 3 * tri.t AS BIGINT) AS paths_p4,
-       CAST(sq.c4 AS BIGINT) AS cycles_c4
-FROM agg CROSS JOIN tri CROSS JOIN pe CROSS JOIN sq
-"""
-
-
-@register("kg_motif_census_4", _MOTIF4_SQL)
-def kg_motif_census_4(spark, sf_dir):
-    """Non-induced connected-motif census up to 4 nodes — the graphlet
-    profile that fingerprints a network's local structure (Milo et al.
-    2002): wedges Σ C(d,2), claws (K₁,₃) Σ C(d,3), triangles from the
-    oriented census, P₄ paths via the identity Σ_{{(u,v)∈E}}
-    (d_u−1)(d_v−1) − 3T (every triangle is counted 3× as a degenerate
-    path), and C₄ cycles from the wedge-pair identity kg_squares_docs
-    uses. All exact integers, all from ONE degree table + ONE triangle
-    census + ONE wedge-endpoint aggregate — the same shuffles the
-    individual graph queries already pay, here composed into the full
-    profile row."""
-    e = _cooc_edges(spark, sf_dir, 2).select(
-        F.col("term_a").alias("a"), F.col("term_b").alias("b"))
-    dec = "decimal(38,0)"
-    deg = (e.select(F.col("a").alias("term"))
-           .unionAll(e.select("b"))
-           .groupBy("term").agg(F.count(F.lit(1)).cast(dec).alias("d")))
-    e2 = e.select(F.col("a").alias("b"), F.col("b").alias("c"))
-    e3 = e.select(F.col("a").alias("a3"), F.col("b").alias("c3"))
-    tri = (e.join(e2, "b")
-           .join(e3, (F.col("a") == F.col("a3"))
-                 & (F.col("c") == F.col("c3")))
-           .agg(F.count(F.lit(1)).cast(dec).alias("t")))
-    und = (e.select(F.col("a").alias("x"), F.col("b").alias("y"))
-           .unionAll(e.select("b", "a")))
-    wedge_ends = (und.select(F.col("x").alias("a"), F.col("y").alias("m"))
-                  .join(und.select(F.col("x").alias("m"),
-                                   F.col("y").alias("b2")), "m")
-                  .filter(F.col("b2") > F.col("a"))
-                  .groupBy(F.col("a").alias("u"), F.col("b2").alias("v"))
-                  .agg(F.count(F.lit(1)).cast(dec).alias("p")))
-    sq = wedge_ends.agg(
-        (F.coalesce(F.sum(F.expr("p * (p - 1) div 2")), F.lit(0)) / 2)
-        .cast(dec).alias("c4"))
-    agg = deg.agg(F.sum(F.expr("d * (d - 1) div 2")).cast(dec)
-                  .alias("wedges"),
-                  F.sum(F.expr("d * (d - 1) * (d - 2) div 6")).cast(dec)
-                  .alias("claws"))
-    ne = e.agg(F.count(F.lit(1)).cast(dec).alias("n_edges"))
-    pe = (e.join(F.broadcast(deg.selectExpr("term AS a", "d AS da")), "a")
-          .join(F.broadcast(deg.selectExpr("term AS b", "d AS db")), "b")
-          .agg(F.sum((F.col("da") - 1) * (F.col("db") - 1))
-               .alias("epairs")))
-    return (ne.crossJoin(agg).crossJoin(tri).crossJoin(pe).crossJoin(sq)
-            .select(F.col("n_edges").cast("long").alias("n_edges"),
-                    F.col("wedges").cast("long").alias("wedges_p3"),
-                    F.col("claws").cast("long").alias("claws_k13"),
-                    F.col("t").cast("long").alias("triangles"),
-                    (F.col("epairs") - 3 * F.col("t")).cast("long")
-                    .alias("paths_p4"),
-                    F.col("c4").cast("long").alias("cycles_c4")))
-
-
-def _attack_sql(ks=(0, 1, 2, 3), n_rounds: int = 12) -> str:
-    head = f"""
-WITH m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {kg_docs.lexicon_values_sql()}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 2
-), rk AS MATERIALIZED (
-  SELECT term, row_number() OVER (ORDER BY d DESC, term) AS r
-  FROM (SELECT term, count(*) AS d FROM (
-          SELECT a AS term FROM e UNION ALL SELECT b FROM e
-        ) GROUP BY term)
-)"""
-    outs = []
-    parts = []
-    for k in ks:
-        parts.append(f""",
-e{k} AS MATERIALIZED (
-  SELECT e.a, e.b FROM e
-  JOIN rk ra ON ra.term = e.a JOIN rk rb ON rb.term = e.b
-  WHERE ra.r > {k} AND rb.r > {k}
-), bd{k} AS MATERIALIZED (
-  SELECT a AS node, b AS nbr FROM e{k} UNION SELECT b, a FROM e{k}
-), n{k} AS MATERIALIZED (SELECT DISTINCT node FROM bd{k}),
-l{k}_0 AS (SELECT node, node AS lbl FROM n{k})""")
-        for i in range(1, n_rounds + 1):
-            parts.append(f""",
-l{k}_{i} AS MATERIALIZED (
-  SELECT nd.node, least(s.lbl, coalesce(nb.mn, s.lbl)) AS lbl
-  FROM n{k} nd
-  JOIN l{k}_{i - 1} s ON s.node = nd.node
-  LEFT JOIN (SELECT bd{k}.node, min(pv.lbl) AS mn
-             FROM bd{k} JOIN l{k}_{i - 1} pv ON pv.node = bd{k}.nbr
-             GROUP BY bd{k}.node) nb ON nb.node = nd.node
-)""")
-        outs.append(f"""
-SELECT {k} AS k_removed,
-       (SELECT CAST(count(*) AS BIGINT) FROM n{k}) AS n_nodes,
-       (SELECT CAST(count(*) AS BIGINT) FROM e{k}) AS n_edges,
-       coalesce((SELECT CAST(max(sz) AS BIGINT) FROM (
-          SELECT count(*) AS sz FROM l{k}_{n_rounds} GROUP BY lbl)), 0)
-           AS lcc_size""")
-    return head + "".join(parts) + " UNION ALL ".join(outs)
-
-
-@register("kg_attack_robustness", _attack_sql())
-def kg_attack_robustness(spark, sf_dir):
-    """Targeted-attack robustness curve (Albert-Jeong-Barabási 2000):
-    remove the k highest-degree hubs (k = 0..3, degree-then-name rank)
-    and measure the surviving graph's largest connected component via
-    the REAL large-star/small-star CC operator each time — the
-    resilience profile a KG operator reads before trusting hub-mediated
-    connectivity (LCC collapse under hub removal = scale-free
-    fragility). The oracle replays each k with the unrolled min-label
-    recurrence. LCC is over non-isolated survivors (documented; 0 when
-    no edges survive). Plan: one degree rank broadcast, then per k one
-    filtered edge set through the iterated-join CC — the same plan
-    the canonicalizer runs, four sizes of it."""
-    from .operators.canonicalize import connected_components
-    e = _cooc_edges(spark, sf_dir, 2).select(
-        F.col("term_a").alias("a"), F.col("term_b").alias("b"))
-    deg = (e.select(F.col("a").alias("term"))
-           .unionAll(e.select("b"))
-           .groupBy("term").agg(F.count(F.lit(1)).alias("d")))
-    rk = deg.select("term", F.row_number().over(
-        Window.orderBy(F.desc("d"), F.asc("term"))).alias("r"))
-    outs = []
-    for k in range(4):
-        keep = rk.filter(F.col("r") > k).select("term")
-        ek = (e.join(F.broadcast(keep.withColumnRenamed("term", "a")), "a")
-              .join(F.broadcast(keep.withColumnRenamed("term", "b")), "b"))
-        asn = connected_components(
-            ek.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-            driver_threshold=0)
-        sizes = asn.groupBy("canon").agg(F.count(F.lit(1)).alias("sz"))
-        stats = (asn.agg(F.countDistinct("norm_term").cast("long")
-                         .alias("n_nodes"))
-                 .crossJoin(ek.agg(F.count(F.lit(1)).cast("long")
-                                   .alias("n_edges")))
-                 .crossJoin(sizes.agg(
-                     F.coalesce(F.max("sz"), F.lit(0)).cast("long")
-                     .alias("lcc_size"))))
-        outs.append(stats.select(F.lit(k).alias("k_removed"),
-                                 "n_nodes", "n_edges", "lcc_size"))
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionAll(o)
-    return res
-
-
-_HEAPS_SQL = """
-WITH tok AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS word FROM documents
-), per_doc_tokens AS (
-  SELECT doc_id // 100 AS bucket, CAST(count(*) AS HUGEINT) AS toks
-  FROM tok GROUP BY 1
-), first_seen AS (
-  SELECT word, min(doc_id) // 100 AS bucket FROM tok
-  WHERE word <> '' GROUP BY word
-), curve AS (
-  SELECT t.bucket,
-         sum(t.toks) OVER (ORDER BY t.bucket) AS n,
-         sum(coalesce(v.new_words, 0)) OVER (ORDER BY t.bucket) AS v
-  FROM per_doc_tokens t
-  LEFT JOIN (SELECT bucket, CAST(count(*) AS HUGEINT) AS new_words
-             FROM first_seen GROUP BY bucket) v ON v.bucket = t.bucket
-), pts AS (
-  SELECT CAST(floor(ln(CAST(n AS DOUBLE)) * 1000000 + 0.5) AS HUGEINT)
-             AS lx,
-         CAST(floor(ln(CAST(v AS DOUBLE)) * 1000000 + 0.5) AS HUGEINT)
-             AS ly
-  FROM curve WHERE n > 0 AND v > 0
-), g AS (
-  SELECT CAST(count(*) AS HUGEINT) AS k, sum(lx) AS sx, sum(ly) AS sy,
-         sum(lx * ly) AS sxy, sum(lx * lx) AS sxx
-  FROM pts
-)
-SELECT CAST(k AS BIGINT) AS n_points,
-       CAST(CASE WHEN k * sxy - sx * sy >= 0
-                 THEN (k * sxy - sx * sy) * 1000000
-                      // (k * sxx - sx * sx)
-                 ELSE -(((sx * sy - k * sxy) * 1000000)
-                        // (k * sxx - sx * sx)) END AS BIGINT) AS beta_e6,
-       CAST(CASE WHEN sy * sxx - sx * sxy >= 0
-                 THEN (sy * sxx - sx * sxy) // (k * sxx - sx * sx)
-                 ELSE -((sx * sxy - sy * sxx)
-                        // (k * sxx - sx * sx)) END AS BIGINT)
-           AS ln_k_e6
-FROM g
-"""
-
-
-@register("text_heaps_law_fit", _HEAPS_SQL)
-def text_heaps_law_fit(spark, sf_dir):
-    """Heaps' law fit V = K·nᵝ over the 100-doc vocabulary-growth curve
-    (the regression text_vocab_growth only plots): per-bucket cumulative
-    token and vocab counts give (ln n, ln V) points — each log e6-floored
-    once from exact integers — and β / ln K come from the exact-integer
-    2-parameter OLS (Cramer), sign-decomposed quotients. β < 1 is the
-    sublinear vocabulary scaling every tokenizer-budget plan assumes.
-    Plan: one token scan feeding both the bucket-token totals and the
-    min-first-seen vocab counts, a bucket-scale window, a 5-cell
-    reduction."""
-    d = _t(spark, sf_dir, "documents")
-    dec = "decimal(38,0)"
-    tok = d.select("doc_id", F.explode(F.split("text", " ")).alias("word"))
-    pdt = (tok.groupBy((F.col("doc_id") / 100).cast("long").alias("bucket"))
-           .agg(F.count(F.lit(1)).cast(dec).alias("toks")))
-    fs = (tok.filter(F.col("word") != "")
-          .groupBy("word")
-          .agg((F.min("doc_id") / 100).cast("long").alias("bucket")))
-    nw = fs.groupBy("bucket").agg(F.count(F.lit(1)).cast(dec)
-                                  .alias("new_words"))
-    w = Window.orderBy("bucket")
-    curve = (pdt.join(nw, "bucket", "left")
-             .select("bucket", F.sum("toks").over(w).alias("n"),
-                     F.sum(F.coalesce("new_words", F.lit(0))).over(w)
-                     .alias("v")))
-    pts = (curve.filter((F.col("n") > 0) & (F.col("v") > 0))
-           .select(F.expr("CAST(floor(ln(CAST(n AS DOUBLE)) * 1000000"
-                          " + 0.5) AS DECIMAL(38,0))").alias("lx"),
-                   F.expr("CAST(floor(ln(CAST(v AS DOUBLE)) * 1000000"
-                          " + 0.5) AS DECIMAL(38,0))").alias("ly")))
-    g = pts.agg(F.count(F.lit(1)).cast(dec).alias("k"),
-                F.sum("lx").alias("sx"), F.sum("ly").alias("sy"),
-                F.sum(F.col("lx") * F.col("ly")).alias("sxy"),
-                F.sum(F.col("lx") * F.col("lx")).alias("sxx"))
-    return g.select(
-        F.col("k").cast("long").alias("n_points"),
-        F.expr("CAST(CASE WHEN k * sxy - sx * sy >= 0"
-               " THEN (k * sxy - sx * sy) * 1000000"
-               " div (k * sxx - sx * sx)"
-               " ELSE -(((sx * sy - k * sxy) * 1000000)"
-               " div (k * sxx - sx * sx)) END AS BIGINT)").alias("beta_e6"),
-        F.expr("CAST(CASE WHEN sy * sxx - sx * sxy >= 0"
-               " THEN (sy * sxx - sx * sxy) div (k * sxx - sx * sx)"
-               " ELSE -((sx * sxy - sy * sxx)"
-               " div (k * sxx - sx * sx)) END AS BIGINT)").alias("ln_k_e6"))
-
-
-_DOBRUSHIN_SQL = """
-WITH seq AS (
-  SELECT event_type AS f,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS t
-  FROM events
-), c AS (
-  SELECT f, t, CAST(count(*) AS HUGEINT) AS c FROM seq
-  WHERE t IS NOT NULL GROUP BY 1, 2
-), types AS (SELECT DISTINCT f AS ty FROM c),
-r AS (SELECT f, sum(c) AS r FROM c GROUP BY f),
-p1 AS (
-  SELECT a.ty AS i, b.ty AS j,
-         coalesce(cc.c, 0) * 1000000 // r.r AS w
-  FROM types a CROSS JOIN types b
-  JOIN r ON r.f = a.ty
-  LEFT JOIN c cc ON cc.f = a.ty AND cc.t = b.ty
-), p2 AS (
-  SELECT a.i, b.j, sum(a.w * b.w) AS w
-  FROM p1 a JOIN p1 b ON b.i = a.j GROUP BY 1, 2
-), p3 AS (
-  SELECT a.i, b.j, sum(a.w * b.w) AS w
-  FROM p2 a JOIN p1 b ON b.i = a.j GROUP BY 1, 2
-), d1 AS (
-  SELECT max(s) AS m FROM (
-    SELECT x.i, y.i AS i2, sum(abs(x.w - y.w)) AS s
-    FROM p1 x JOIN p1 y ON y.j = x.j AND y.i > x.i GROUP BY 1, 2)
-), d2 AS (
-  SELECT max(s) AS m FROM (
-    SELECT x.i, y.i AS i2, sum(abs(x.w - y.w)) AS s
-    FROM p2 x JOIN p2 y ON y.j = x.j AND y.i > x.i GROUP BY 1, 2)
-), d3 AS (
-  SELECT max(s) AS m FROM (
-    SELECT x.i, y.i AS i2, sum(abs(x.w - y.w)) AS s
-    FROM p3 x JOIN p3 y ON y.j = x.j AND y.i > x.i GROUP BY 1, 2)
-)
-SELECT 1 AS t, CAST(d1.m * 1000000 // (2 * 1000000) AS BIGINT)
-           AS dobrushin_e6 FROM d1
-UNION ALL
-SELECT 2, CAST(d2.m * 1000000 // (2 * 1000000000000) AS BIGINT) FROM d2
-UNION ALL
-SELECT 3, CAST(d3.m * 1000000
-               // (2 * 1000000000000000000) AS BIGINT) FROM d3
-"""
-
-
-@register("q_events_dobrushin_mixing", _DOBRUSHIN_SQL)
-def q_events_dobrushin_mixing(spark, sf_dir):
-    """Dobrushin contraction (ergodicity) coefficient of the event-type
-    Markov chain at powers t = 1..3: δ(Pᵗ) = max over row pairs of the
-    total-variation distance — δ→0 is the MIXING certificate
-    (|δ(Pᵗ)| bounds how fast any two starting conditions become
-    indistinguishable), the convergence-RATE lens next to
-    q_events_markov_stationary's fixed point. The transition matrix is
-    e6-floored ONCE (shared by both engines, the PACF discipline) and
-    its powers are EXACT integer matrix products at e6ᵗ scale, so every
-    TV distance is exact integer arithmetic with one final quotient per
-    t. Plan: one lead-window transition count, then type-cardinality
-    matrix joins — schema-scale after the scan."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select(F.col("event_type").alias("f"),
-                   F.lead("event_type").over(w).alias("t"))
-    c = (seq.filter(F.col("t").isNotNull())
-         .groupBy("f", "t").agg(F.count(F.lit(1)).cast(dec).alias("c")))
-    types = c.select(F.col("f").alias("ty")).distinct()
-    r = c.groupBy("f").agg(F.sum("c").alias("r"))
-    p1 = (types.select(F.col("ty").alias("i"))
-          .crossJoin(types.select(F.col("ty").alias("j")))
-          .join(r.withColumnRenamed("f", "i"), "i")
-          .join(c.select(F.col("f").alias("i"), F.col("t").alias("j"),
-                         "c"), ["i", "j"], "left")
-          .select("i", "j",
-                  F.expr("CAST(coalesce(c, 0) * 1000000 div r"
-                         " AS DECIMAL(38,0))").alias("w")))
-
-    def matmul(a, b):
-        return (a.select(F.col("i"), F.col("j").alias("m"),
-                         F.col("w").alias("wa"))
-                .join(b.select(F.col("i").alias("m"), F.col("j"),
-                               F.col("w").alias("wb")), "m")
-                .groupBy("i", "j")
-                .agg(F.sum(F.col("wa") * F.col("wb")).alias("w")))
-
-    p2 = matmul(p1, p1)
-    p3 = matmul(p2, p1)
-
-    def delta(p, scale):
-        x = p.select(F.col("i"), F.col("j"), F.col("w").alias("wx"))
-        y = p.select(F.col("i").alias("i2"), F.col("j"),
-                     F.col("w").alias("wy"))
-        pair = (x.join(y, "j").filter(F.col("i2") > F.col("i"))
-                .groupBy("i", "i2")
-                .agg(F.sum(F.abs(F.col("wx") - F.col("wy"))).alias("s")))
-        return pair.agg(F.expr(
-            f"CAST(max(s) * 1000000 div (2 * {scale}) AS BIGINT)")
-            .alias("dobrushin_e6"))
-
-    d1 = delta(p1, "1000000")
-    d2 = delta(p2, "1000000000000")
-    d3 = delta(p3, "1000000000000000000")
-    return (d1.select(F.lit(1).alias("t"), "dobrushin_e6")
-            .unionAll(d2.select(F.lit(2), "dobrushin_e6"))
-            .unionAll(d3.select(F.lit(3), "dobrushin_e6")))
-
-
-def _gzip_fixture_sql(n: int = 20, seed: int = 42) -> str:
-    """Oracle for the hand-rolled RFC 1952 multi-member walk: every
-    manifest column is re-derived from the pure (shard_id, j, seed) spec
-    formulas (CRC via zlib.crc32 on the spec content, never on gzip
-    bytes); flg/os are pinned per style (stdlib writer: FNAME|XFL2|OS255;
-    hand-built: FHCRC|FEXTRA|FNAME|FCOMMENT|OS3). A missed FEXTRA skip, an
-    unverified header CRC16, a wrong trailer offset in the concatenated
-    stream or an ISIZE mixup flips the hash; crc_ok is asserted 1."""
-    import hashlib as _h
-    import zlib as _z
-    from knowledge_extraction_pipeline_spark.sources.archives import (
-        gzip_member_spec,
-    )
-    rows = []
-    for i in range(n):
-        for j, (name, content, mtime, style) in enumerate(
-                gzip_member_spec(i, seed)):
-            crc = _z.crc32(content) & 0xFFFFFFFF
-            flg, osb = (8, 255) if style == 0 else (0x1E, 3)
-            rows.append(
-                f"({i}, {j}, '{name}', {mtime}, {flg}, {osb},"
-                f" {len(content)}, {crc}, 1,"
-                f" '{_h.md5(content).hexdigest()}')")
-    return (f"SELECT CAST(shard_id AS BIGINT) AS shard_id,"
-            f" CAST(member_idx AS INTEGER) AS member_idx, name,"
-            f" CAST(mtime AS BIGINT) AS mtime, CAST(flg AS INTEGER) AS flg,"
-            f" CAST(os_byte AS INTEGER) AS os_byte,"
-            f" CAST(usize AS BIGINT) AS usize, CAST(crc32 AS BIGINT) AS crc32,"
-            f" CAST(crc_ok AS INTEGER) AS crc_ok, content_md5"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(shard_id, member_idx, name, mtime, flg, os_byte, usize,"
-            f" crc32, crc_ok, content_md5)")
-
-
-@register("multimodal_gzip_members", _gzip_fixture_sql())
-def multimodal_gzip_members(spark, sf_dir):
-    """Concatenated multi-member gzip shard manifest via the HAND-ROLLED
-    RFC 1952 walk (sources/archives.parse_gzip_members): fixed header,
-    FEXTRA/FNAME/FCOMMENT branches, header CRC16 verified when FHCRC is
-    set, raw-deflate body inflated with the zlib primitive (wbits=-15,
-    never gzip.decompress), member boundary recovered from the
-    decompressor's unused tail, CRC-32 + ISIZE trailer re-checked. Mixed
-    stdlib-written and hand-built members so both flag families are
-    exercised against independent bytes. This is the .jsonl.gz ingestion
-    surface of a web-crawl corpus: one mapInPandas over the binary shard
-    column, so a 10⁹-member listing is a single narrow scan."""
-    from .sources.archives import gzip_member_manifest, synthetic_gzip_shards
-    out = gzip_member_manifest(synthetic_gzip_shards(spark, 20))
-    return out.select("shard_id",
-                      F.col("member_idx").cast("int").alias("member_idx"),
-                      "name", F.col("mtime").cast("long").alias("mtime"),
-                      F.col("flg").cast("int").alias("flg"),
-                      F.col("os_byte").cast("int").alias("os_byte"),
-                      F.col("usize").cast("long").alias("usize"),
-                      F.col("crc32").cast("long").alias("crc32"),
-                      F.col("crc_ok").cast("int").alias("crc_ok"),
-                      "content_md5")
-
-
-_DTW_BIG = 4611686018427387904  # 2^62 sentinel for out-of-grid predecessors
-
-_DTW_SQL = f"""
-WITH RECURSIVE ac AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS HUGEINT) AS c
-  FROM events WHERE event_type = 'click' GROUP BY 1
-), bc AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS HUGEINT) AS c
-  FROM events WHERE event_type = 'purchase' GROUP BY 1
-), a AS (
-  SELECT day, row_number() OVER (ORDER BY day) AS i,
-         c * 1000000 // (SELECT sum(c) FROM ac) AS v
-  FROM ac
-), b AS (
-  SELECT day, row_number() OVER (ORDER BY day) AS j,
-         c * 1000000 // (SELECT sum(c) FROM bc) AS v
-  FROM bc
-), s AS (
-  SELECT (SELECT list(v ORDER BY i) FROM a) AS la,
-         (SELECT list(v ORDER BY j) FROM b) AS lb,
-         (SELECT count(*) FROM a) AS nn,
-         (SELECT count(*) FROM b) AS mm
-), dp AS (
-  SELECT 2 AS k, [abs(la[1] - lb[1])] AS cur,
-         CAST([] AS HUGEINT[]) AS prev, [CAST(-1 AS INTEGER)] AS dirs
-  FROM s
-  UNION ALL
-  SELECT q.k2,
-         list_transform(q.tmp, t -> t.c + least(t.u, t.f, t.g)),
-         q.oc,
-         list_transform(q.tmp, t -> CASE
-             WHEN t.g <= t.u AND t.g <= t.f THEN 0
-             WHEN t.u <= t.f THEN 1 ELSE 2 END)
-  FROM (
-    SELECT d.k + 1 AS k2, d.cur AS oc,
-      list_transform(
-        range(1, least(s.nn, d.k) - greatest(1, d.k + 1 - s.mm) + 2),
-        p -> struct_pack(
-          c := abs(s.la[greatest(1, d.k + 1 - s.mm) + p - 1]
-                   - s.lb[d.k + 1
-                          - (greatest(1, d.k + 1 - s.mm) + p - 1)]),
-          u := coalesce(CASE WHEN greatest(1, d.k + 1 - s.mm) + p - 2
-                                  - greatest(1, d.k - s.mm) + 1 >= 1
-                             THEN d.cur[greatest(1, d.k + 1 - s.mm) + p - 2
-                                        - greatest(1, d.k - s.mm) + 1]
-                             END, CAST({_DTW_BIG} AS HUGEINT)),
-          f := coalesce(CASE WHEN greatest(1, d.k + 1 - s.mm) + p - 1
-                                  - greatest(1, d.k - s.mm) + 1 >= 1
-                             THEN d.cur[greatest(1, d.k + 1 - s.mm) + p - 1
-                                        - greatest(1, d.k - s.mm) + 1]
-                             END, CAST({_DTW_BIG} AS HUGEINT)),
-          g := coalesce(CASE WHEN greatest(1, d.k + 1 - s.mm) + p - 2
-                                  - greatest(1, d.k - 1 - s.mm) + 1 >= 1
-                             THEN d.prev[greatest(1, d.k + 1 - s.mm) + p - 2
-                                         - greatest(1, d.k - 1 - s.mm) + 1]
-                             END, CAST({_DTW_BIG} AS HUGEINT)))) AS tmp
-    FROM dp d, s
-    WHERE d.k < s.nn + s.mm
-  ) q
-), bt AS (
-  SELECT s.nn + s.mm AS k, s.nn AS i, s.mm AS j FROM s
-  UNION ALL
-  SELECT CASE d.dirs[b.i - greatest(1, b.k - s.mm) + 1]
-           WHEN 0 THEN b.k - 2 ELSE b.k - 1 END,
-         CASE d.dirs[b.i - greatest(1, b.k - s.mm) + 1]
-           WHEN 2 THEN b.i ELSE b.i - 1 END,
-         CASE d.dirs[b.i - greatest(1, b.k - s.mm) + 1]
-           WHEN 1 THEN b.j ELSE b.j - 1 END
-  FROM bt b JOIN dp d ON d.k = b.k, s
-  WHERE b.k > 2
-), path AS (
-  SELECT k, i, j, row_number() OVER (ORDER BY k) AS step FROM bt
-)
-SELECT CAST(p.step AS INTEGER) AS step, CAST(p.i AS INTEGER) AS i,
-       CAST(p.j AS INTEGER) AS j, a.day AS day_a, b2.day AS day_b,
-       CAST(abs(a.v - b2.v) AS BIGINT) AS local_cost,
-       CAST(d.cur[p.i - greatest(1, p.k - s.mm) + 1] AS BIGINT) AS cum_cost
-FROM path p
-JOIN a ON a.i = p.i
-JOIN b b2 ON b2.j = p.j
-JOIN dp d ON d.k = p.k, s
-"""
-
-
-@register("q_events_dtw_alignment", _DTW_SQL)
-def q_events_dtw_alignment(spark, sf_dir):
-    """Dynamic-time-warping alignment of the daily CLICK volume profile
-    against the daily PURCHASE profile (both e6-floored integer shares, so
-    magnitude differences cancel and every DP cell is exact integer
-    arithmetic): local cost |a_i − b_j|, classic (diag, up, left) steps,
-    deterministic diag > up > left tiebreak. The output is the full
-    optimal warping path — which click-days explain which purchase-days,
-    the lead/lag structure cross-correlation (q_events_cross_correlation)
-    can only average. The oracle runs the DP as an ANTI-DIAGONAL WAVEFRONT
-    (cells on diagonal k depend only on diagonals k−1/k−2 — two carried
-    lists, no within-wavefront dependency), which is exactly how a
-    cluster-scale DTW distributes, then backtracks the stored argmin
-    directions as a second recursion. The engine collects the two
-    calendar-bounded series (≈30 values each — the Viterbi/Holt bounded-
-    recursion discipline) and replays the identical DP; the daily
-    reduction itself is distributive."""
-    e = _t(spark, sf_dir, "events")
-
-    def prof(et):
-        rows = (e.filter(F.col("event_type") == et)
-                .groupBy(F.col("ts").cast("date").alias("day"))
-                .agg(F.count(F.lit(1)).cast("long").alias("c"))
-                .orderBy("day").collect())
-        tot = sum(int(r["c"]) for r in rows)
-        return ([r["day"] for r in rows],
-                [int(r["c"]) * 1000000 // tot for r in rows])
-    da, a = prof("click")
-    db, b = prof("purchase")
-    n, m = len(a), len(b)
-    BIG = _DTW_BIG
-    d = [[0] * (m + 1) for _ in range(n + 1)]
-    dirs = [[-1] * (m + 1) for _ in range(n + 1)]
-    for i in range(1, n + 1):
-        for j in range(1, m + 1):
-            c = abs(a[i - 1] - b[j - 1])
-            if i == 1 and j == 1:
-                d[i][j] = c
-                continue
-            up = d[i - 1][j] if i > 1 else BIG
-            lf = d[i][j - 1] if j > 1 else BIG
-            dg = d[i - 1][j - 1] if (i > 1 and j > 1) else BIG
-            if dg <= up and dg <= lf:
-                d[i][j], dirs[i][j] = c + dg, 0
-            elif up <= lf:
-                d[i][j], dirs[i][j] = c + up, 1
-            else:
-                d[i][j], dirs[i][j] = c + lf, 2
-    path = []
-    i, j = n, m
-    while True:
-        path.append((i, j))
-        if i == 1 and j == 1:
-            break
-        dr = dirs[i][j]
-        if dr == 0:
-            i, j = i - 1, j - 1
-        elif dr == 1:
-            i -= 1
-        else:
-            j -= 1
-    path.reverse()
-    out = [(st + 1, i, j, da[i - 1], db[j - 1],
-            abs(a[i - 1] - b[j - 1]), d[i][j])
-           for st, (i, j) in enumerate(path)]
-    return spark.createDataFrame(
-        out, "step int, i int, j int, day_a date, day_b date,"
-             " local_cost long, cum_cost long")
-
-
-_WW_K = 50000   # setup cost per order
-_WW_H = 1       # holding cost per unit-month
-
-_WW_SQL = f"""
-WITH RECURSIVE m0 AS (
-  SELECT date_trunc('month', CAST(l_shipdate AS TIMESTAMP)) AS mon,
-         CAST(sum(CAST(l_quantity AS BIGINT)) AS HUGEINT) AS d
-  FROM lineitem GROUP BY 1
-), mi AS (
-  SELECT mon, d, row_number() OVER (ORDER BY mon) AS t FROM m0
-), tc AS (SELECT CAST(count(*) AS INTEGER) AS tt FROM mi),
-dp AS (
-  SELECT 0 AS t, [CAST(0 AS HUGEINT)] AS fl, CAST([] AS INTEGER[]) AS bl,
-         CAST([] AS HUGEINT[]) AS s1l, CAST([] AS HUGEINT[]) AS s2l
-  UNION ALL
-  SELECT d0.t + 1,
-         list_append(d0.fl, list_min(cand)),
-         list_append(d0.bl,
-                     CAST(list_position(cand, list_min(cand)) AS INTEGER)),
-         s1l2, s2l2
-  FROM dp d0 JOIN mi ON mi.t = d0.t + 1,
-  LATERAL (SELECT
-    list_append(d0.s1l,
-                coalesce(d0.s1l[d0.t], CAST(0 AS HUGEINT)) + mi.d) AS s1l2,
-    list_append(d0.s2l,
-                coalesce(d0.s2l[d0.t], CAST(0 AS HUGEINT))
-                + CAST(d0.t + 1 AS HUGEINT) * mi.d) AS s2l2) lat,
-  LATERAL (SELECT
-    list_transform(range(1, d0.t + 2), j ->
-      d0.fl[j] + {_WW_K}
-      + {_WW_H} * ((s2l2[d0.t + 1]
-                    - coalesce(s2l2[j - 1], CAST(0 AS HUGEINT)))
-                   - j * (s1l2[d0.t + 1]
-                          - coalesce(s1l2[j - 1],
-                                     CAST(0 AS HUGEINT))))) AS cand) lc
-), dpf AS (
-  SELECT fl, bl, s1l, s2l FROM dp WHERE t = (SELECT tt FROM tc)
-), bt AS (
-  SELECT (SELECT CAST(bl[(SELECT tt FROM tc)] AS INTEGER) FROM dpf) AS frm,
-         (SELECT tt FROM tc) AS upto
-  UNION ALL
-  SELECT CAST(d.bl[b.frm - 1] AS INTEGER), b.frm - 1
-  FROM bt b, dpf d WHERE b.frm > 1
-)
-SELECT CAST(m1.mon AS DATE) AS order_month,
-       CAST(m2.mon AS DATE) AS covers_through,
-       CAST(b.upto - b.frm + 1 AS INTEGER) AS n_months,
-       CAST(d.s1l[b.upto] - coalesce(d.s1l[b.frm - 1], 0) AS BIGINT)
-           AS units,
-       CAST({_WW_H} * ((d.s2l[b.upto] - coalesce(d.s2l[b.frm - 1], 0))
-            - b.frm * (d.s1l[b.upto] - coalesce(d.s1l[b.frm - 1], 0)))
-            AS BIGINT) AS holding_cost,
-       CAST(d.fl[(SELECT tt FROM tc) + 1] AS BIGINT) AS total_cost
-FROM bt b
-CROSS JOIN dpf d
-JOIN mi m1 ON m1.t = b.frm
-JOIN mi m2 ON m2.t = b.upto
-"""
-
-
-@register("q_orders_wagner_whitin", _WW_SQL)
-def q_orders_wagner_whitin(spark, sf_dir):
-    """Wagner-Whitin optimal lot sizing over the monthly shipped-quantity
-    demand series: f(t) = min_j f(j−1) + K + h·Σ_{{u=j..t}}(u−j)·d_u, the
-    exact dynamic lot-size policy the EOQ / reorder-point / Croston trio
-    approximates. Holding costs collapse to weighted prefix sums
-    (S2 − j·S1), so every DP cell is exact integer arithmetic; ties break
-    to the EARLIEST order month (first argmin). Output: the optimal
-    order schedule — one row per placed order with its coverage span,
-    units, holding cost, and the optimal total cost. The oracle carries
-    the f/argmin/prefix lists through a single recursive pass and
-    backtracks the order months; the engine collects the calendar-bounded
-    monthly series (≈80 values — the Viterbi/Holt bounded-recursion
-    discipline) and replays the identical O(T²) DP; the monthly reduction
-    itself is distributive."""
-    li = _t(spark, sf_dir, "lineitem")
-    rows = (li.groupBy(F.date_trunc("month", F.col("l_shipdate"))
-                       .alias("mon"))
-            .agg(F.sum(F.col("l_quantity").cast("long")).alias("d"))
-            .orderBy("mon").collect())
-    mons = [r["mon"] for r in rows]
-    dem = [int(r["d"]) for r in rows]
-    T = len(dem)
-    K, H = _WW_K, _WW_H
-    s1 = [0] * (T + 1)
-    s2 = [0] * (T + 1)
-    for t in range(1, T + 1):
-        s1[t] = s1[t - 1] + dem[t - 1]
-        s2[t] = s2[t - 1] + t * dem[t - 1]
-    f = [0] * (T + 1)
-    back = [0] * (T + 1)
-    for t in range(1, T + 1):
-        best, bj = None, 0
-        for j in range(1, t + 1):
-            c = f[j - 1] + K + H * ((s2[t] - s2[j - 1])
-                                    - j * (s1[t] - s1[j - 1]))
-            if best is None or c < best:
-                best, bj = c, j
-        f[t], back[t] = best, bj
-    out = []
-    upto = T
-    while upto >= 1:
-        frm = back[upto]
-        units = s1[upto] - s1[frm - 1]
-        hold = H * ((s2[upto] - s2[frm - 1]) - frm * (s1[upto] - s1[frm - 1]))
-        out.append((mons[frm - 1].date(), mons[upto - 1].date(),
-                    upto - frm + 1,
-                    units, hold, f[T]))
-        upto = frm - 1
-    return spark.createDataFrame(
-        out, "order_month date, covers_through date,"
-             " n_months int, units long, holding_cost long,"
-             " total_cost long")
 
 
 _BOWTIE_SQL_TPL = """
@@ -27182,598 +6925,6 @@ def ann_dbscan_clusters(spark, sf_dir):
                          threshold=0.30, min_pts=4)
 
 
-_SAX_W = 6           # PAA segments
-_SAX_B = (-674490, 0, 674490)   # e6 Gaussian quartiles ±Φ⁻¹(0.75), 0
-
-_SAX_SQL = f"""
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS HUGEINT) AS x,
-         row_number() OVER (ORDER BY CAST(ts AS DATE)) AS rn
-  FROM events GROUP BY 1
-), g AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS t, sum(x * x) AS sq
-  FROM d
-), seg AS (
-  SELECT (rn - 1) * {_SAX_W} // (SELECT n FROM g) AS s,
-         sum(x) AS ss, CAST(count(*) AS HUGEINT) AS ls,
-         min(day) AS day_from, max(day) AS day_to
-  FROM d GROUP BY 1
-), z AS (
-  SELECT s, day_from, day_to, ls,
-         (ss * g.n - ls * g.t) * 1000000 AS lhs,
-         g.n * g.sq - g.t * g.t AS dd
-  FROM seg, g
-)
-SELECT CAST(s AS INTEGER) AS segment, day_from, day_to,
-       CAST(CASE WHEN lhs >= 0 THEN lhs // (ls * (SELECT n FROM g))
-                 ELSE -((-lhs) // (ls * (SELECT n FROM g))) END AS BIGINT)
-           AS paa_dev_e6,
-       CASE CAST(
-         CASE WHEN lhs > CAST(floor(CAST({_SAX_B[0]} * ls AS DOUBLE)
-                                    * sqrt(CAST(dd AS DOUBLE))) AS HUGEINT)
-              THEN 1 ELSE 0 END
-         + CASE WHEN lhs > CAST(floor(CAST({_SAX_B[1]} * ls AS DOUBLE)
-                                      * sqrt(CAST(dd AS DOUBLE))) AS HUGEINT)
-                THEN 1 ELSE 0 END
-         + CASE WHEN lhs > CAST(floor(CAST({_SAX_B[2]} * ls AS DOUBLE)
-                                      * sqrt(CAST(dd AS DOUBLE))) AS HUGEINT)
-                THEN 1 ELSE 0 END AS INTEGER)
-         WHEN 0 THEN 'a' WHEN 1 THEN 'b' WHEN 2 THEN 'c' ELSE 'd'
-       END AS symbol
-FROM z
-"""
-
-
-@register("q_events_sax_symbols", _SAX_SQL)
-def q_events_sax_symbols(spark, sf_dir):
-    """SAX symbolization (Lin/Keogh) of the daily event-volume series:
-    PAA into {_SAX_W} equal-count segments, then each segment mean
-    z-scored against Gaussian-quartile breakpoints (±Φ⁻¹(0.75) injected
-    as e6 integer literals) into a 4-letter alphabet — the symbolic
-    representation motif mining and time-series indexing build on.
-    Every comparison is cross-multiplied to exact integers: the segment
-    deviation (S_s·n − L_s·T)·10⁶ meets β·L_s·√(n·Σx² − T²), whose single
-    sqrt-of-exact-integer is floored ONCE identically in both engines
-    (the Grubbs/Hurst one-sqrt discipline); paa_dev_e6 is a
-    sign-decomposed integer quotient. Fully distributed: one daily
-    aggregate, one 3-cell stats row broadcast back, one segment
-    aggregate — no collect, no recursion."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d = (e.groupBy(F.col("ts").cast("date").alias("day"))
-         .agg(F.count(F.lit(1)).cast(dec).alias("x")))
-    d = d.select("day", "x",
-                 F.row_number().over(Window.orderBy("day")).alias("rn"))
-    g = d.agg(F.count(F.lit(1)).cast(dec).alias("n"),
-              F.sum("x").alias("t"),
-              F.sum(F.col("x") * F.col("x")).alias("sq"))
-    seg = (d.crossJoin(F.broadcast(g))
-           .groupBy(F.expr(f"CAST((rn - 1) * {_SAX_W} div n AS BIGINT)")
-                    .alias("s"))
-           .agg(F.sum("x").alias("ss"),
-                F.count(F.lit(1)).cast(dec).alias("ls"),
-                F.min("day").alias("day_from"),
-                F.max("day").alias("day_to"),
-                F.first("n").alias("n"), F.first("t").alias("t"),
-                F.first("sq").alias("sq")))
-    z = seg.select(
-        "s", "day_from", "day_to", "ls", "n",
-        F.expr("(ss * n - ls * t) * 1000000").alias("lhs"),
-        F.expr("n * sq - t * t").alias("dd"))
-    cnt = " + ".join(
-        f"(CASE WHEN lhs > CAST(floor(CAST({b} * ls AS DOUBLE)"
-        f" * sqrt(CAST(dd AS DOUBLE))) AS DECIMAL(38,0))"
-        f" THEN 1 ELSE 0 END)" for b in _SAX_B)
-    return z.select(
-        F.col("s").cast("int").alias("segment"), "day_from", "day_to",
-        F.expr("CAST(CASE WHEN lhs >= 0 THEN lhs div (ls * n)"
-               " ELSE -((-lhs) div (ls * n)) END AS BIGINT)")
-        .alias("paa_dev_e6"),
-        F.expr(f"CASE CAST({cnt} AS INT) WHEN 0 THEN 'a' WHEN 1 THEN 'b'"
-               f" WHEN 2 THEN 'c' ELSE 'd' END").alias("symbol"))
-
-
-_ADF_SQL = """
-WITH d0 AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS HUGEINT) AS y
-  FROM events GROUP BY 1
-), lagd AS (
-  SELECT y,
-         lag(y) OVER (ORDER BY day) AS y1,
-         lag(y, 2) OVER (ORDER BY day) AS y2
-  FROM d0
-), obs AS (
-  SELECT y - y1 AS z, y1 AS yl, y1 - y2 AS dl
-  FROM lagd WHERE y2 IS NOT NULL
-), g AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n,
-         sum(z) AS sz, sum(yl) AS sy, sum(dl) AS sd,
-         sum(z * z) AS szz, sum(yl * yl) AS syy, sum(dl * dl) AS sdd,
-         sum(z * yl) AS szy, sum(z * dl) AS szd, sum(yl * dl) AS syd
-  FROM obs
-), c AS (
-  SELECT n,
-         n * syy - sy * sy AS cyy, n * sdd - sd * sd AS cdd,
-         n * syd - sy * sd AS cyd, n * szy - sz * sy AS czy,
-         n * szd - sz * sd AS czd, n * szz - sz * sz AS czz
-  FROM g
-), k AS (
-  SELECT n, cyy, cdd, cyd, czz,
-         cyy * cdd - cyd * cyd AS det,
-         czy * cdd - czd * cyd AS nb,
-         czd * cyy - czy * cyd AS ng,
-         czz * (cyy * cdd - cyd * cyd)
-           - (czy * cdd - czd * cyd) * czy
-           - (czd * cyy - czy * cyd) * czd AS r
-  FROM c
-)
-SELECT CAST(n AS BIGINT) AS n_obs,
-       CAST(CASE WHEN det = 0 THEN NULL
-                 WHEN nb >= 0 THEN nb * 1000000 // det
-                 ELSE -((-nb) * 1000000 // det) END AS BIGINT) AS beta_e6,
-       CAST(CASE WHEN det = 0 THEN NULL
-                 WHEN ng >= 0 THEN ng * 1000000 // det
-                 ELSE -((-ng) * 1000000 // det) END AS BIGINT) AS gamma_e6,
-       CAST(CASE WHEN det = 0 OR r = 0 OR cdd = 0 THEN NULL
-                 ELSE (CASE WHEN nb >= 0 THEN 1 ELSE -1 END)
-                      * CAST(floor(1000000.0
-                          * sqrt((CAST(nb AS DOUBLE) * CAST(nb AS DOUBLE)
-                                  * CAST(n - 3 AS DOUBLE))
-                                 / (CAST(r AS DOUBLE)
-                                    * CAST(cdd AS DOUBLE)))) AS HUGEINT)
-            END AS BIGINT) AS df_t_e6
-FROM k
-"""
-
-
-@register("q_events_adf_test", _ADF_SQL)
-def q_events_adf_test(spark, sf_dir):
-    """Augmented Dickey-Fuller unit-root test (one lagged difference) on
-    the daily event-count series: Δy_t = α + β·y_{t−1} + γ·Δy_{t−1}.
-    Demeaning absorbs the intercept, so β̂/γ̂ are exact integer Cramer
-    quotients over mean-cleared cross-products (the Moran's I / PACF
-    discipline), RSS stays an exact integer at N·det scale, and the DF
-    t-statistic collapses to t² = Nβ²·(N−3)/(R·Sdd) — one sqrt of a ratio
-    of exact integers, e6-floored identically in both engines (Grubbs
-    one-sqrt discipline), sign restored from the exact numerator.
-    Singular systems yield NULL, not errors (Bass discipline). β̂ near
-    zero with small |t| = cannot reject the unit root. Fully distributed:
-    one daily aggregate, one lag window, one 10-cell reduction."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d0 = (e.groupBy(F.col("ts").cast("date").alias("day"))
-          .agg(F.count(F.lit(1)).cast(dec).alias("y")))
-    w = Window.orderBy("day")
-    lagd = d0.select("y", F.lag("y").over(w).alias("y1"),
-                     F.lag("y", 2).over(w).alias("y2"))
-    obs = (lagd.filter(F.col("y2").isNotNull())
-           .select((F.col("y") - F.col("y1")).alias("z"),
-                   F.col("y1").alias("yl"),
-                   (F.col("y1") - F.col("y2")).alias("dl")))
-    g = obs.agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum("z").alias("sz"), F.sum("yl").alias("sy"),
-        F.sum("dl").alias("sd"),
-        F.sum(F.col("z") * F.col("z")).alias("szz"),
-        F.sum(F.col("yl") * F.col("yl")).alias("syy"),
-        F.sum(F.col("dl") * F.col("dl")).alias("sdd"),
-        F.sum(F.col("z") * F.col("yl")).alias("szy"),
-        F.sum(F.col("z") * F.col("dl")).alias("szd"),
-        F.sum(F.col("yl") * F.col("dl")).alias("syd"))
-    c = g.select(
-        "n",
-        F.expr("n * syy - sy * sy").alias("cyy"),
-        F.expr("n * sdd - sd * sd").alias("cdd"),
-        F.expr("n * syd - sy * sd").alias("cyd"),
-        F.expr("n * szy - sz * sy").alias("czy"),
-        F.expr("n * szd - sz * sd").alias("czd"),
-        F.expr("n * szz - sz * sz").alias("czz"))
-    k = c.select(
-        "n", "cdd",
-        F.expr("cyy * cdd - cyd * cyd").alias("det"),
-        F.expr("czy * cdd - czd * cyd").alias("nb"),
-        F.expr("czd * cyy - czy * cyd").alias("ng"),
-        F.expr("czz * (cyy * cdd - cyd * cyd)"
-               " - (czy * cdd - czd * cyd) * czy"
-               " - (czd * cyy - czy * cyd) * czd").alias("r"))
-    return k.select(
-        F.col("n").cast("long").alias("n_obs"),
-        F.expr("CAST(CASE WHEN det = 0 THEN NULL"
-               " WHEN nb >= 0 THEN nb * 1000000 div det"
-               " ELSE -((-nb) * 1000000 div det) END AS BIGINT)")
-        .alias("beta_e6"),
-        F.expr("CAST(CASE WHEN det = 0 THEN NULL"
-               " WHEN ng >= 0 THEN ng * 1000000 div det"
-               " ELSE -((-ng) * 1000000 div det) END AS BIGINT)")
-        .alias("gamma_e6"),
-        F.expr("CAST(CASE WHEN det = 0 OR r = 0 OR cdd = 0 THEN NULL"
-               " ELSE (CASE WHEN nb >= 0 THEN 1 ELSE -1 END)"
-               " * CAST(floor(1000000.0"
-               " * sqrt((CAST(nb AS DOUBLE) * CAST(nb AS DOUBLE)"
-               " * CAST(n - 3 AS DOUBLE))"
-               " / (CAST(r AS DOUBLE) * CAST(cdd AS DOUBLE))))"
-               " AS DECIMAL(38,0)) END AS BIGINT)").alias("df_t_e6"))
-
-
-def _mime_fixture_sql(n: int = 24, seed: int = 42) -> str:
-    """Oracle for the hand-rolled MIME walk: every manifest column is
-    re-derived from the pure (msg_id, j, seed) spec formulas — decoded
-    sizes and MD5s come from the ORIGINAL content, so a wrong boundary
-    split (phantom trailing newline), a base64 padding slip or a missed
-    quoted-printable soft break flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.mime import (
-        mime_part_spec,
-    )
-    rows = []
-    for i in range(n):
-        for j, (ctype, enc, name, content) in enumerate(
-                mime_part_spec(i, seed)):
-            nm = "NULL" if name is None else f"'{name}'"
-            rows.append(f"({i}, {j}, '{ctype}', '{enc}', {nm},"
-                        f" {len(content)},"
-                        f" '{_h.md5(content).hexdigest()}')")
-    return (f"SELECT CAST(msg_id AS BIGINT) AS msg_id,"
-            f" CAST(part_idx AS INTEGER) AS part_idx, content_type,"
-            f" encoding, CAST(filename AS VARCHAR) AS filename,"
-            f" CAST(usize AS BIGINT) AS usize, content_md5"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(msg_id, part_idx, content_type, encoding, filename,"
-            f" usize, content_md5)")
-
-
-@register("multimodal_mime_parts", _mime_fixture_sql())
-def multimodal_mime_parts(spark, sf_dir):
-    """MIME multipart message manifest via the HAND-ROLLED RFC 2045/2046
-    walk (sources/mime.parse_mime_parts): header unfolding, quoted/bare
-    boundary parameter scan, strict `--boundary` delimiter lines with the
-    CRLF-belongs-to-the-delimiter rule, and hand-written base64 and
-    quoted-printable decoders (soft line breaks, =XX escapes) — never
-    email.parser / base64 / quopri. Messages are written by the stdlib
-    email package, so the parser faces independently-produced bytes; the
-    oracle re-derives every column from the content formulas. This is the
-    mail-corpus ingestion surface (mbox/EML shards): one mapInPandas over
-    the binary column, no driver involvement."""
-    from .sources.mime import mime_part_manifest, synthetic_mime_messages
-    out = mime_part_manifest(synthetic_mime_messages(spark, 24))
-    return out.select("msg_id",
-                      F.col("part_idx").cast("int").alias("part_idx"),
-                      "content_type", "encoding", "filename",
-                      F.col("usize").cast("long").alias("usize"),
-                      "content_md5")
-
-
-_WP_SQL = """
-WITH RECURSIVE w0 AS (
-  SELECT unnest(string_split(text, ' ')) AS w FROM documents
-), wc AS (
-  SELECT w, CAST(count(*) AS HUGEINT) AS c FROM w0 WHERE w <> ''
-  GROUP BY 1
-), topw AS (
-  SELECT w AS piece FROM wc ORDER BY c DESC, w LIMIT 10
-), pref AS (
-  SELECT piece FROM (
-    SELECT substring(w, 1, l) AS piece, sum(c) AS sc
-    FROM wc, (VALUES (2), (3), (4)) t(l) WHERE length(w) > l
-    GROUP BY 1 ORDER BY sc DESC, piece LIMIT 12) p
-), suf AS (
-  SELECT piece FROM (
-    SELECT substring(w, length(w) - l + 1, l) AS piece, sum(c) AS sc
-    FROM wc, (VALUES (2), (3), (4)) t(l) WHERE length(w) > l
-    GROUP BY 1 ORDER BY sc DESC, piece LIMIT 20) p
-), chars AS (
-  SELECT DISTINCT unnest(list_transform(range(1, length(w) + 1),
-                                        i -> substring(w, CAST(i AS INTEGER), 1)))
-      AS piece
-  FROM wc
-), vstart AS (
-  SELECT DISTINCT piece FROM (
-    SELECT piece FROM topw UNION ALL SELECT piece FROM pref
-    UNION ALL SELECT piece FROM chars) u
-), vcont AS (
-  SELECT DISTINCT piece FROM (
-    SELECT piece FROM suf UNION ALL SELECT piece FROM chars) u
-), st AS (
-  SELECT w, CAST(1 AS BIGINT) AS pos, CAST('' AS VARCHAR) AS toks,
-         0 AS np
-  FROM wc
-  UNION ALL
-  SELECT s.w, s.pos + b.l,
-         s.toks || CASE WHEN s.pos = 1 THEN '' ELSE ' ##' END
-                || substring(s.w, CAST(s.pos AS INTEGER), CAST(b.l AS INTEGER)),
-         s.np + 1
-  FROM st s, LATERAL (
-    SELECT max(length(v.piece)) AS l FROM vstart v
-    WHERE s.pos = 1
-      AND substring(s.w, CAST(s.pos AS INTEGER), length(v.piece)) = v.piece
-    UNION ALL
-    SELECT max(length(v.piece)) FROM vcont v
-    WHERE s.pos > 1
-      AND substring(s.w, CAST(s.pos AS INTEGER), length(v.piece)) = v.piece
-  ) b(l)
-  WHERE s.pos <= length(s.w) AND b.l IS NOT NULL
-), final AS (
-  SELECT w, toks, np FROM st WHERE pos = length(w) + 1
-)
-SELECT wc.w AS word, CAST(wc.c AS BIGINT) AS n_occurrences,
-       f.toks AS pieces, CAST(f.np AS INTEGER) AS n_pieces
-FROM wc JOIN final f ON f.w = wc.w
-"""
-
-
-@register("text_wordpiece_encode", _WP_SQL)
-def text_wordpiece_encode(spark, sf_dir):
-    """WordPiece tokenization (Wu et al. 2016 / BERT): a corpus-derived
-    vocabulary — top-10 whole words, top-12 weighted prefixes (len 2-4),
-    top-20 weighted suffixes (len 2-4) as ## continuation pieces, plus
-    every single character on both sides (ties broken count-desc then
-    lexicographic) — then GREEDY LONGEST-MATCH-FIRST encoding of every
-    distinct word: longest start piece, then longest ## piece repeatedly.
-    The other tokenizer family next to BPE (bpe_merges/bpe_encode):
-    merge-rule-driven there, vocabulary-matching here. The oracle replays
-    the greedy loop as a recursive CTE with a LATERAL longest-match
-    aggregate per step, so the hash pins the match order, the ## marking
-    and the tie rules. Scale shape: counting is one token scan; the
-    vocabulary is bounded (≤68 pieces, a driver-side closure like the BPE
-    merge table); encoding runs over DISTINCT words (vocabulary-scale,
-    mapInPandas) and never re-tokenizes the corpus."""
-    d = _t(spark, sf_dir, "documents")
-    words = (d.select(F.explode(F.split("text", " ")).alias("w"))
-             .filter(F.col("w") != ""))
-    wc = (words.groupBy("w")
-          .agg(F.count(F.lit(1)).cast("long").alias("c"))).persist()
-    topw = [r["w"] for r in
-            wc.orderBy(F.desc("c"), F.asc("w")).limit(10).collect()]
-
-    def _grams(side_expr, lens, limit):
-        g = None
-        for ln in lens:
-            e = (wc.filter(F.length("w") > ln)
-                 .select(side_expr(ln).alias("piece"), "c"))
-            g = e if g is None else g.unionByName(e)
-        return [r["piece"] for r in
-                (g.groupBy("piece").agg(F.sum("c").alias("sc"))
-                 .orderBy(F.desc("sc"), F.asc("piece"))
-                 .limit(limit).collect())]
-
-    prefs = _grams(lambda ln: F.expr(f"substring(w, 1, {ln})"),
-                   (2, 3, 4), 12)
-    sufs = _grams(lambda ln: F.expr(
-        f"substring(w, length(w) - {ln} + 1, {ln})"), (2, 3, 4), 20)
-    chars = [r["piece"] for r in
-             (wc.select(F.explode(F.expr(
-                 "transform(sequence(1, length(w)),"
-                 " i -> substring(w, i, 1))")).alias("piece"))
-              .distinct().collect())]
-    vstart = set(topw) | set(prefs) | set(chars)
-    vcont = set(sufs) | set(chars)
-    max_start = max((len(p) for p in vstart), default=1)
-    max_cont = max((len(p) for p in vcont), default=1)
-
-    def encode(batches):
-        for pdf in batches:
-            out = []
-            for w, c in zip(pdf["w"], pdf["c"]):
-                pos, toks = 0, []
-                while pos < len(w):
-                    vocab = vstart if pos == 0 else vcont
-                    mx = max_start if pos == 0 else max_cont
-                    for ln in range(min(mx, len(w) - pos), 0, -1):
-                        if w[pos:pos + ln] in vocab:
-                            toks.append(("" if pos == 0 else "##")
-                                        + w[pos:pos + ln])
-                            pos += ln
-                            break
-                    else:
-                        raise AssertionError("chars cover everything")
-                out.append((w, int(c), " ".join(toks), len(toks)))
-            import pandas as pd
-            yield pd.DataFrame(out, columns=["word", "n_occurrences",
-                                             "pieces", "n_pieces"])
-
-    return wc.mapInPandas(
-        encode, schema="word string, n_occurrences long, pieces string,"
-                       " n_pieces int")
-
-
-_SYNTH_PRE = 15   # pre-period length (days)
-
-_SYNTH_SQL = f"""
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CAST(count(*) FILTER (WHERE event_type = 'purchase') AS HUGEINT)
-             AS z,
-         CAST(count(*) FILTER (WHERE event_type = 'click') AS HUGEINT)
-             AS a,
-         CAST(count(*) FILTER (WHERE event_type = 'view') AS HUGEINT)
-             AS b,
-         row_number() OVER (ORDER BY CAST(ts AS DATE)) AS rn
-  FROM events GROUP BY 1
-), g AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n,
-         sum(z) AS sz, sum(a) AS sa, sum(b) AS sb,
-         sum(a * a) AS saa, sum(b * b) AS sbb, sum(a * b) AS sab,
-         sum(z * a) AS sza, sum(z * b) AS szb
-  FROM d WHERE rn <= {_SYNTH_PRE}
-), k AS (
-  SELECT n, sz, sa, sb,
-         (n * saa - sa * sa) * (n * sbb - sb * sb)
-           - (n * sab - sa * sb) * (n * sab - sa * sb) AS det,
-         (n * sza - sz * sa) * (n * sbb - sb * sb)
-           - (n * szb - sz * sb) * (n * sab - sa * sb) AS nw1,
-         (n * szb - sz * sb) * (n * saa - sa * sa)
-           - (n * sza - sz * sa) * (n * sab - sa * sb) AS nw2
-  FROM g
-), p AS (
-  SELECT d.day, d.z, k.n, k.det,
-         k.det * k.sz + k.nw1 * (k.n * d.a - k.sa)
-           + k.nw2 * (k.n * d.b - k.sb) AS pt
-  FROM d, k WHERE d.rn > {_SYNTH_PRE} AND k.det <> 0
-)
-SELECT day, CAST(z AS BIGINT) AS actual,
-       CAST(CASE WHEN pt >= 0 THEN pt * 1000000 // (n * det)
-                 ELSE -((-pt) * 1000000 // (n * det)) END AS BIGINT)
-           AS synth_e6,
-       CAST(CASE WHEN z * n * det - pt >= 0
-                 THEN (z * n * det - pt) * 1000000 // (n * det)
-                 ELSE -((pt - z * n * det) * 1000000 // (n * det)) END
-            AS BIGINT) AS gap_e6
-FROM p
-"""
-
-
-@register("q_events_synthetic_control", _SYNTH_SQL)
-def q_events_synthetic_control(spark, sf_dir):
-    """Synthetic-control counterfactual for the daily PURCHASE series:
-    fit purchase ≈ α + w₁·click + w₂·view on the first {_SYNTH_PRE}-day
-    pre-period (mean-cleared 2×2 Cramer — the ADF/Moran machinery), then
-    project the donor pool forward and report the per-day post-period gap
-    actual − synthetic, the causal-impact lens q_events_did's two-group
-    difference can't give a single treated series. Every weight is an
-    exact integer quotient; the prediction is carried UNREDUCED at
-    N·det scale so the gap is one sign-decomposed division per day — no
-    intermediate float ever. det = 0 (collinear donors) yields zero rows
-    in both engines rather than a wrong answer. Fully distributed: one
-    daily pivot aggregate, one 9-cell pre-period reduction broadcast back
-    to the post-period days."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d = (e.groupBy(F.col("ts").cast("date").alias("day"))
-         .agg(F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).cast(dec).alias("z"),
-              F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).cast(dec).alias("a"),
-              F.sum(F.when(F.col("event_type") == "view", 1)
-                    .otherwise(0)).cast(dec).alias("b")))
-    d = d.select("*", F.row_number().over(Window.orderBy("day"))
-                 .alias("rn"))
-    g = (d.filter(F.col("rn") <= _SYNTH_PRE)
-         .agg(F.count(F.lit(1)).cast(dec).alias("n"),
-              F.sum("z").alias("sz"), F.sum("a").alias("sa"),
-              F.sum("b").alias("sb"),
-              F.sum(F.col("a") * F.col("a")).alias("saa"),
-              F.sum(F.col("b") * F.col("b")).alias("sbb"),
-              F.sum(F.col("a") * F.col("b")).alias("sab"),
-              F.sum(F.col("z") * F.col("a")).alias("sza"),
-              F.sum(F.col("z") * F.col("b")).alias("szb")))
-    k = g.select(
-        "n", "sz", "sa", "sb",
-        F.expr("(n * saa - sa * sa) * (n * sbb - sb * sb)"
-               " - (n * sab - sa * sb) * (n * sab - sa * sb)").alias("det"),
-        F.expr("(n * sza - sz * sa) * (n * sbb - sb * sb)"
-               " - (n * szb - sz * sb) * (n * sab - sa * sb)").alias("nw1"),
-        F.expr("(n * szb - sz * sb) * (n * saa - sa * sa)"
-               " - (n * sza - sz * sa) * (n * sab - sa * sb)").alias("nw2"))
-    p = (d.filter(F.col("rn") > _SYNTH_PRE)
-         .crossJoin(F.broadcast(k.filter(F.col("det") != 0)))
-         .select("day", "z", "n", "det",
-                 F.expr("det * sz + nw1 * (n * a - sa)"
-                        " + nw2 * (n * b - sb)").alias("pt")))
-    return p.select(
-        "day", F.col("z").cast("long").alias("actual"),
-        F.expr("CAST(CASE WHEN pt >= 0 THEN pt * 1000000 div (n * det)"
-               " ELSE -((-pt) * 1000000 div (n * det)) END AS BIGINT)")
-        .alias("synth_e6"),
-        F.expr("CAST(CASE WHEN z * n * det - pt >= 0"
-               " THEN (z * n * det - pt) * 1000000 div (n * det)"
-               " ELSE -((pt - z * n * det) * 1000000 div (n * det)) END"
-               " AS BIGINT)").alias("gap_e6"))
-
-
-_KNAP_N = 24     # items: top-N parts by retail price
-_KNAP_C = 200    # capacity in size units
-
-_KNAPSACK_SQL = f"""
-WITH RECURSIVE items AS (
-  SELECT p_partkey, CAST(floor(p_retailprice) AS HUGEINT) AS v,
-         CAST(p_size AS HUGEINT) AS w,
-         row_number() OVER (ORDER BY p_retailprice DESC, p_partkey) AS i
-  FROM part ORDER BY p_retailprice DESC, p_partkey LIMIT {_KNAP_N}
-), dp AS (
-  SELECT 0 AS i,
-         list_transform(range(0, {_KNAP_C} + 1),
-                        c -> CAST(0 AS HUGEINT)) AS fl,
-         CAST([] AS INTEGER[]) AS tk
-  UNION ALL
-  SELECT d.i + 1,
-         list_transform(range(0, {_KNAP_C} + 1), c ->
-           CASE WHEN c >= it.w
-                     AND d.fl[CAST(c - it.w AS INTEGER) + 1] + it.v
-                         > d.fl[CAST(c AS INTEGER) + 1]
-                THEN d.fl[CAST(c - it.w AS INTEGER) + 1] + it.v
-                ELSE d.fl[CAST(c AS INTEGER) + 1] END),
-         list_transform(range(0, {_KNAP_C} + 1), c ->
-           CASE WHEN c >= it.w
-                     AND d.fl[CAST(c - it.w AS INTEGER) + 1] + it.v
-                         > d.fl[CAST(c AS INTEGER) + 1]
-                THEN 1 ELSE 0 END)
-  FROM dp d JOIN items it ON it.i = d.i + 1
-  WHERE d.i < {_KNAP_N}
-), bt AS (
-  SELECT CAST({_KNAP_N} AS INTEGER) AS i, CAST({_KNAP_C} AS HUGEINT) AS c
-  UNION ALL
-  SELECT b.i - 1,
-         CASE WHEN d.tk[CAST(b.c AS INTEGER) + 1] = 1
-              THEN b.c - it.w ELSE b.c END
-  FROM bt b JOIN dp d ON d.i = b.i JOIN items it ON it.i = b.i
-  WHERE b.i >= 1
-)
-SELECT it.p_partkey, CAST(it.v AS BIGINT) AS value_d,
-       CAST(it.w AS INTEGER) AS weight,
-       CAST(d.tk[CAST(b.c AS INTEGER) + 1] AS INTEGER) AS chosen,
-       CAST((SELECT fl[{_KNAP_C} + 1] FROM dp WHERE i = {_KNAP_N})
-            AS BIGINT) AS best_total
-FROM bt b JOIN dp d ON d.i = b.i JOIN items it ON it.i = b.i
-WHERE b.i >= 1
-"""
-
-
-@register("q_parts_knapsack", _KNAPSACK_SQL)
-def q_parts_knapsack(spark, sf_dir):
-    """0/1 knapsack over the {_KNAP_N} highest-priced parts (value =
-    floored dollars, weight = p_size, capacity {_KNAP_C}): the exact DP
-    with a take-only-if-STRICTLY-better tiebreak, plus the backtracked
-    item selection — the budgeted-selection primitive behind shard
-    packing and sampling-under-budget decisions (data_pack_* are
-    heuristics; this is the exact optimum for one bounded pool). The
-    oracle carries the full capacity-indexed value list through an
-    item-by-item recursion and backtracks the stored take bits; the
-    engine collects the bounded item pool (the Viterbi bounded-recursion
-    discipline) and replays the identical DP. Output: every pool item
-    with its chosen flag and the optimal total."""
-    p = _t(spark, sf_dir, "part")
-    rows = (p.select("p_partkey",
-                     F.expr("CAST(floor(p_retailprice) AS LONG)").alias("v"),
-                     F.col("p_size").cast("long").alias("w"),
-                     F.row_number().over(
-                         Window.orderBy(F.desc("p_retailprice"),
-                                        F.asc("p_partkey"))).alias("i"))
-            .filter(F.col("i") <= _KNAP_N).orderBy("i").collect())
-    C = _KNAP_C
-    fl = [0] * (C + 1)
-    tks = []
-    for r in rows:
-        v, w = int(r["v"]), int(r["w"])
-        nf, tk = fl[:], [0] * (C + 1)
-        for c in range(C + 1):
-            if c >= w and fl[c - w] + v > fl[c]:
-                nf[c], tk[c] = fl[c - w] + v, 1
-        fl, _ = nf, tks.append(tk)
-    best = fl[C]
-    out = []
-    c = C
-    for idx in range(len(rows) - 1, -1, -1):
-        r = rows[idx]
-        ch = tks[idx][c]
-        out.append((int(r["p_partkey"]), int(r["v"]), int(r["w"]),
-                    ch, best))
-        if ch:
-            c -= int(r["w"])
-    return spark.createDataFrame(
-        out, "p_partkey long, value_d long, weight int, chosen int,"
-             " best_total long")
-
-
 _DISTDIST_SQL = f"""
 WITH RECURSIVE m AS MATERIALIZED (
   SELECT DISTINCT d.doc_id, lex.term
@@ -27836,58 +6987,6 @@ def kg_distance_distribution(spark, sf_dir):
     return distance_distribution(
         edges.select(F.col("term_a").alias("subj"),
                      F.col("term_b").alias("obj")))
-
-
-def _sqlite_fixture_sql(n: int = 18, seed: int = 42) -> str:
-    """Oracle for the hand-rolled SQLite file walk: row counts, integer
-    sums, text digests and CREATE-sql digests are re-derived from the pure
-    (db_id, j, r, seed) spec formulas — a varint slip, a serial-type
-    mixup, a missed interior-page descent or a wrong cell-pointer origin
-    flips the hash. Page numbers are deliberately NOT compared (engine-
-    version artifacts, not content)."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.sqlitefile import (
-        sqlite_table_spec,
-    )
-    rows = []
-    for i in range(n):
-        for name, sql, trs in sqlite_table_spec(i, seed):
-            tmd5 = _h.md5("|".join(c1 for _, c1 in trs).encode()) \
-                .hexdigest()
-            smd5 = _h.md5(sql.encode()).hexdigest()
-            rows.append(f"({i}, '{name}', {len(trs)},"
-                        f" {sum(c0 for c0, _ in trs)}, '{tmd5}', '{smd5}')")
-    return (f"SELECT CAST(db_id AS BIGINT) AS db_id, table_name,"
-            f" CAST(n_rows AS BIGINT) AS n_rows,"
-            f" CAST(sum_c0 AS BIGINT) AS sum_c0, text_md5, sql_md5"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(db_id, table_name, n_rows, sum_c0, text_md5, sql_md5)")
-
-
-@register("multimodal_sqlite_tables", _sqlite_fixture_sql())
-def multimodal_sqlite_tables(spark, sf_dir):
-    """SQLite database-image manifest via the HAND-ROLLED file-format walk
-    (sources/sqlitefile.parse_sqlite_tables): 100-byte header, table
-    b-tree interior/leaf page descent with cell pointer arrays, big-endian
-    varints, and the record serial-type decode (1/2/3/4/6/8-byte
-    twos-complement ints, 8/9 zero/one, TEXT 13+2n) — never sqlite3 for
-    reading. sqlite_master is parsed as a b-tree like any other table,
-    then each discovered root page is walked for row counts, exact
-    integer-column sums and rowid-ordered text digests; every 5th image
-    holds a page-spilling table so the interior-page path is genuinely
-    exercised. Databases are written by the REAL SQLite engine
-    (stdlib serialize()), so the parser faces independently-produced
-    bytes. This is the app-export/telemetry-dump ingestion surface: one
-    mapInPandas over the binary column, no driver involvement."""
-    from .sources.sqlitefile import (
-        sqlite_table_manifest,
-        synthetic_sqlite_dbs,
-    )
-    out = sqlite_table_manifest(synthetic_sqlite_dbs(spark, 18))
-    return out.select("db_id", "table_name",
-                      F.col("n_rows").cast("long").alias("n_rows"),
-                      F.col("sum_c0").cast("long").alias("sum_c0"),
-                      "text_md5", "sql_md5")
 
 
 def _kmv_diff_sql(table: str, key_col: str, group_col: str,
@@ -27962,2180 +7061,6 @@ def sketch_theta_diff_events(spark, sf_dir):
     from .operators.sketches import kmv_difference
     return kmv_difference(_t(spark, sf_dir, "events"), "user_id",
                           "event_type")
-
-
-_LCS_W = 48   # tokens per side
-
-_LCS_SQL = f"""
-WITH RECURSIVE ta AS (
-  SELECT i, w FROM (
-    SELECT unnest(string_split(text, ' ')[1:{_LCS_W}]) AS w,
-           unnest(range(1, least(len(string_split(text, ' ')),
-                                 {_LCS_W}) + 1)) AS i
-    FROM documents WHERE doc_id = 0) q WHERE w <> ''
-), tb AS (
-  SELECT i AS j, w FROM (
-    SELECT unnest(string_split(text, ' ')[1:{_LCS_W}]) AS w,
-           unnest(range(1, least(len(string_split(text, ' ')),
-                                 {_LCS_W}) + 1)) AS i
-    FROM documents WHERE doc_id = 1) q WHERE w <> ''
-), s AS (
-  SELECT (SELECT list(w ORDER BY i) FROM ta) AS la,
-         (SELECT list(w ORDER BY j) FROM tb) AS lb,
-         (SELECT count(*) FROM ta) AS nn,
-         (SELECT count(*) FROM tb) AS mm
-), dp AS (
-  SELECT 0 AS k, [CAST(0 AS BIGINT)] AS cur, CAST([] AS BIGINT[]) AS prev
-  FROM s
-  UNION ALL
-  SELECT q.k2,
-         list_transform(q.tmp, t ->
-           CASE WHEN t.i = 0 OR t.j = 0 THEN CAST(0 AS BIGINT)
-                ELSE greatest(t.u, t.f, t.g + t.eq) END),
-         q.oc
-  FROM (
-    SELECT d.k + 1 AS k2, d.cur AS oc,
-      list_transform(
-        range(0, least(s.nn, d.k + 1) - greatest(0, d.k + 1 - s.mm) + 1),
-        p -> struct_pack(
-          i := greatest(0, d.k + 1 - s.mm) + p,
-          j := d.k + 1 - (greatest(0, d.k + 1 - s.mm) + p),
-          eq := CASE WHEN greatest(0, d.k + 1 - s.mm) + p >= 1
-                          AND d.k + 1
-                              - (greatest(0, d.k + 1 - s.mm) + p) >= 1
-                          AND s.la[greatest(0, d.k + 1 - s.mm) + p]
-                              = s.lb[d.k + 1
-                                     - (greatest(0, d.k + 1 - s.mm) + p)]
-                     THEN 1 ELSE 0 END,
-          u := coalesce(CASE WHEN greatest(0, d.k + 1 - s.mm) + p - 1
-                                  - greatest(0, d.k - s.mm) + 1 >= 1
-                             THEN d.cur[greatest(0, d.k + 1 - s.mm) + p - 1
-                                        - greatest(0, d.k - s.mm) + 1]
-                             END, CAST(-1 AS BIGINT)),
-          f := coalesce(CASE WHEN greatest(0, d.k + 1 - s.mm) + p
-                                  - greatest(0, d.k - s.mm) + 1 >= 1
-                             THEN d.cur[greatest(0, d.k + 1 - s.mm) + p
-                                        - greatest(0, d.k - s.mm) + 1]
-                             END, CAST(-1 AS BIGINT)),
-          g := coalesce(CASE WHEN greatest(0, d.k + 1 - s.mm) + p - 1
-                                  - greatest(0, d.k - 1 - s.mm) + 1 >= 1
-                             THEN d.prev[greatest(0, d.k + 1 - s.mm) + p - 1
-                                         - greatest(0, d.k - 1 - s.mm) + 1]
-                             END, CAST(-1 AS BIGINT)))) AS tmp
-    FROM dp d, s
-    WHERE d.k < s.nn + s.mm
-  ) q
-), dpk AS MATERIALIZED (
-  SELECT k, cur FROM dp
-), cells AS MATERIALIZED (
-  SELECT k, greatest(0, k - (SELECT mm FROM s)) + p - 1 AS i,
-         k - (greatest(0, k - (SELECT mm FROM s)) + p - 1) AS j, f
-  FROM (
-    SELECT k, unnest(cur) AS f,
-           unnest(range(1, len(cur) + 1)) AS p
-    FROM dpk) q
-), bt AS (
-  SELECT 0 AS step, s.nn AS i, s.mm AS j, CAST('end' AS VARCHAR) AS op,
-         CAST(NULL AS VARCHAR) AS tok
-  FROM s
-  UNION ALL
-  SELECT b.step + 1,
-         CASE WHEN mv.op IN ('keep', 'del') THEN b.i - 1 ELSE b.i END,
-         CASE WHEN mv.op IN ('keep', 'ins') THEN b.j - 1 ELSE b.j END,
-         mv.op, mv.tok
-  FROM bt b
-  CROSS JOIN s
-  LEFT JOIN cells cu ON cu.i = b.i - 1 AND cu.j = b.j
-  LEFT JOIN cells cl ON cl.i = b.i AND cl.j = b.j - 1
-  CROSS JOIN LATERAL (
-    SELECT CASE
-             WHEN b.i > 0 AND b.j > 0 AND s.la[b.i] = s.lb[b.j]
-               THEN 'keep'
-             WHEN b.i > 0 AND (b.j = 0
-                               OR coalesce(cu.f, 0) >= coalesce(cl.f, 0))
-               THEN 'del'
-             ELSE 'ins' END AS op,
-           CASE
-             WHEN b.i > 0 AND b.j > 0 AND s.la[b.i] = s.lb[b.j]
-               THEN s.la[b.i]
-             WHEN b.i > 0 AND (b.j = 0
-                               OR coalesce(cu.f, 0) >= coalesce(cl.f, 0))
-               THEN s.la[b.i]
-             ELSE s.lb[b.j] END AS tok) mv
-  WHERE b.i > 0 OR b.j > 0
-), lcs AS (
-  SELECT CAST(count(*) AS BIGINT) AS lcs_len FROM bt WHERE op = 'keep'
-)
-SELECT CAST((SELECT max(step) FROM bt) - b.step + 1 AS INTEGER) AS step,
-       b.op, b.tok,
-       CAST(b.i + CASE WHEN b.op IN ('keep', 'del') THEN 1 ELSE 0 END
-            AS INTEGER) AS i,
-       CAST(b.j + CASE WHEN b.op IN ('keep', 'ins') THEN 1 ELSE 0 END
-            AS INTEGER) AS j,
-       l.lcs_len,
-       CAST(l.lcs_len * 2000000 // (s.nn + s.mm) AS BIGINT) AS sim_e6
-FROM bt b, lcs l, s WHERE b.op <> 'end'
-"""
-
-
-@register("dedup_lcs_diff", _LCS_SQL)
-def dedup_lcs_diff(spark, sf_dir):
-    """Token-level LCS diff between documents 0 and 1 (first {_LCS_W}
-    tokens each): the full backtracked edit script (keep / del / ins per
-    step, walking from the ends of both token streams), the LCS length
-    and the 2·LCS/(n+m) similarity — the explain-the-near-duplicate
-    primitive next to dedup_substring_spans (which finds shared spans but
-    not the minimal edit). The oracle runs the DP as the same
-    ANTI-DIAGONAL WAVEFRONT as q_events_dtw_alignment (max instead of
-    min, equality bonus on the diagonal) and derives backtrack directions
-    FROM THE VALUES — both predecessor cells sit in the one previous-
-    diagonal row, so the standard prefer-keep-then-del tiebreak needs no
-    stored direction bits. The engine collects the two bounded token
-    prefixes (Viterbi discipline) and replays the identical DP. i/j are
-    positions BEFORE each emitted operation, so the script replays
-    right-to-left."""
-    d = _t(spark, sf_dir, "documents")
-    rows = {r["doc_id"]: r["text"]
-            for r in d.filter(F.col("doc_id") < 2)
-            .select("doc_id", "text").collect()}
-    a = [w for w in rows[0].split(" ")[:_LCS_W] if w != ""]
-    b = [w for w in rows[1].split(" ")[:_LCS_W] if w != ""]
-    n, m = len(a), len(b)
-    f = [[0] * (m + 1) for _ in range(n + 1)]
-    for i in range(1, n + 1):
-        for j in range(1, m + 1):
-            eq = 1 if a[i - 1] == b[j - 1] else 0
-            f[i][j] = max(f[i - 1][j], f[i][j - 1], f[i - 1][j - 1] + eq)
-    script = []
-    i, j = n, m
-    while i > 0 or j > 0:
-        if i > 0 and j > 0 and a[i - 1] == b[j - 1]:
-            script.append(("keep", a[i - 1], i, j))
-            i, j = i - 1, j - 1
-        elif i > 0 and (j == 0 or f[i - 1][j] >= f[i][j - 1]):
-            script.append(("del", a[i - 1], i, j))
-            i -= 1
-        else:
-            script.append(("ins", b[j - 1], i, j))
-            j -= 1
-    lcs_len = sum(1 for op, *_ in script if op == "keep")
-    sim = lcs_len * 2000000 // (n + m)
-    total = len(script)
-    out = [(total - st, op, tok, pi, pj, lcs_len, sim)
-           for st, (op, tok, pi, pj) in enumerate(script)]
-    return spark.createDataFrame(
-        out, "step int, op string, tok string, i int, j int,"
-             " lcs_len long, sim_e6 long")
-
-
-_TE_SQL = """
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CAST(count(*) FILTER (WHERE event_type = 'click') AS HUGEINT)
-             AS c,
-         CAST(count(*) FILTER (WHERE event_type = 'purchase') AS HUGEINT)
-             AS p
-  FROM events GROUP BY 1
-), bits AS (
-  SELECT day,
-         CASE WHEN c > lag(c) OVER w THEN 1 ELSE 0 END AS xc,
-         CASE WHEN p > lag(p) OVER w THEN 1 ELSE 0 END AS xp,
-         lag(c) OVER w AS pc
-  FROM d WINDOW w AS (ORDER BY day)
-), seq AS (
-  SELECT xc, xp,
-         lead(xc) OVER w AS nxc, lead(xp) OVER w AS nxp
-  FROM (SELECT * FROM bits WHERE pc IS NOT NULL) b
-  WINDOW w AS (ORDER BY day)
-), tr AS (
-  SELECT 'click->purchase' AS direction, nxp AS yn, xp AS y, xc AS x
-  FROM seq WHERE nxp IS NOT NULL
-  UNION ALL
-  SELECT 'purchase->click', nxc, xc, xp FROM seq WHERE nxc IS NOT NULL
-), cells AS (
-  SELECT direction, yn, y, x, CAST(count(*) AS HUGEINT) AS nyyx
-  FROM tr GROUP BY 1, 2, 3, 4
-), myx AS (
-  SELECT direction, y, x, CAST(sum(nyyx) AS HUGEINT) AS nyx
-  FROM cells GROUP BY 1, 2, 3
-), myy AS (
-  SELECT direction, yn, y, CAST(sum(nyyx) AS HUGEINT) AS nyy
-  FROM cells GROUP BY 1, 2, 3
-), my AS (
-  SELECT direction, y, CAST(sum(nyyx) AS HUGEINT) AS ny
-  FROM cells GROUP BY 1, 2
-), tot AS (
-  SELECT direction, CAST(sum(nyyx) AS HUGEINT) AS nn
-  FROM cells GROUP BY 1
-)
-SELECT c.direction, CAST(t.nn AS BIGINT) AS n_transitions,
-       CAST(sum(CAST(floor(
-         (CAST(c.nyyx AS DOUBLE) / CAST(t.nn AS DOUBLE))
-         * ln((CAST(c.nyyx AS DOUBLE) * CAST(my.ny AS DOUBLE))
-              / (CAST(myx.nyx AS DOUBLE) * CAST(myy.nyy AS DOUBLE)))
-         * 1000000000 + 0.5) AS BIGINT)) AS BIGINT) AS te_e9
-FROM cells c
-JOIN myx ON myx.direction = c.direction AND myx.y = c.y AND myx.x = c.x
-JOIN myy ON myy.direction = c.direction AND myy.yn = c.yn
-        AND myy.y = c.y
-JOIN my ON my.direction = c.direction AND my.y = c.y
-JOIN tot t ON t.direction = c.direction
-GROUP BY 1, 2
-"""
-
-
-@register("q_events_transfer_entropy", _TE_SQL)
-def q_events_transfer_entropy(spark, sf_dir):
-    """Transfer entropy (Schreiber 2000) between the daily click and
-    purchase up/down sequences, both directions: TE(X→Y) =
-    Σ p(y′,y,x)·ln(p(y′|y,x)/p(y′|y)) — the DIRECTED, model-free
-    information-flow measure next to q_events_granger's linear test and
-    q_events_mutual_information's symmetric dependence. Day-over-day
-    direction bits (strictly-greater, ties down) give a 2×2×2 count cube
-    per direction; every per-cell term is a double computed from EXACT
-    integer counts by identically-shaped expressions in both engines,
-    e9-floored before the integer sum (the MI/JSD discipline). Fully
-    distributed: one daily pivot, two lag/lead windows over the
-    calendar-bounded series, an 8-cell contingency aggregate per
-    direction."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d = (e.groupBy(F.col("ts").cast("date").alias("day"))
-         .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).cast(dec).alias("c"),
-              F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).cast(dec).alias("p")))
-    w = Window.orderBy("day")
-    bits = d.select(
-        "day",
-        F.when(F.col("c") > F.lag("c").over(w), 1).otherwise(0)
-        .alias("xc"),
-        F.when(F.col("p") > F.lag("p").over(w), 1).otherwise(0)
-        .alias("xp"),
-        F.lag("c").over(w).alias("pc"))
-    seq = (bits.filter(F.col("pc").isNotNull())
-           .select("day", "xc", "xp",
-                   F.lead("xc").over(w).alias("nxc"),
-                   F.lead("xp").over(w).alias("nxp")))
-    tr = (seq.filter(F.col("nxp").isNotNull())
-          .select(F.lit("click->purchase").alias("direction"),
-                  F.col("nxp").alias("yn"), F.col("xp").alias("y"),
-                  F.col("xc").alias("x"))
-          .unionByName(
-              seq.filter(F.col("nxc").isNotNull())
-              .select(F.lit("purchase->click").alias("direction"),
-                      F.col("nxc").alias("yn"), F.col("xc").alias("y"),
-                      F.col("xp").alias("x"))))
-    cells = (tr.groupBy("direction", "yn", "y", "x")
-             .agg(F.count(F.lit(1)).cast(dec).alias("nyyx")))
-    myx = cells.groupBy("direction", "y", "x") \
-        .agg(F.sum("nyyx").alias("nyx"))
-    myy = cells.groupBy("direction", "yn", "y") \
-        .agg(F.sum("nyyx").alias("nyy"))
-    my = cells.groupBy("direction", "y").agg(F.sum("nyyx").alias("ny"))
-    tot = cells.groupBy("direction").agg(F.sum("nyyx").alias("nn"))
-    j = (cells.join(myx, ["direction", "y", "x"])
-         .join(myy, ["direction", "yn", "y"])
-         .join(my, ["direction", "y"])
-         .join(tot, "direction"))
-    return (j.groupBy("direction", F.col("nn").cast("long")
-                      .alias("n_transitions"))
-            .agg(F.sum(F.expr(
-                "CAST(floor((CAST(nyyx AS DOUBLE) / CAST(nn AS DOUBLE))"
-                " * ln((CAST(nyyx AS DOUBLE) * CAST(ny AS DOUBLE))"
-                " / (CAST(nyx AS DOUBLE) * CAST(nyy AS DOUBLE)))"
-                " * 1000000000 + 0.5) AS BIGINT)")).cast("long")
-                 .alias("te_e9")))
-
-
-_SA_CHARS = 240   # bounded prefix of document 0
-
-_SA_SQL = f"""
-WITH s AS (
-  SELECT substring(text, 1, {_SA_CHARS}) AS t
-  FROM documents WHERE doc_id = 0
-), subs AS (
-  SELECT substring(t, CAST(a.i AS INTEGER), CAST(b.l AS INTEGER)) AS ss
-  FROM s, generate_series(1, 240) AS a(i),
-       generate_series(1, 240) AS b(l)
-  WHERE a.i + b.l - 1 <= length(t)
-), cnts AS (
-  SELECT ss, count(*) AS c FROM subs GROUP BY 1
-), lrs AS (
-  SELECT ss, length(ss) AS l FROM cnts WHERE c >= 2
-  ORDER BY length(ss) DESC, ss LIMIT 1
-)
-SELECT CAST(length(s.t) AS INTEGER) AS n_chars,
-       CAST((SELECT count(*) FROM cnts) AS BIGINT)
-           AS n_distinct_substrings,
-       CAST(lrs.l AS INTEGER) AS lrs_len, lrs.ss AS lrs
-FROM s, lrs
-"""
-
-
-@register("text_distinct_substrings", _SA_SQL)
-def text_distinct_substrings(spark, sf_dir):
-    """Distinct-substring census of a bounded document prefix via a REAL
-    SUFFIX AUTOMATON (Blumer et al. 1985): number of distinct substrings
-    = Σ_states len(v) − len(link(v)), and the longest repeated substring
-    from endpos sizes (clone-aware counts propagated in len order,
-    first-occurrence positions for extraction; ties break to the
-    lexicographically smallest, matching the oracle's total order). The
-    substring-structure primitive under dedup_substring_spans' rolling
-    hashes — exact, not sampled. The engine builds the automaton in
-    linear time over the collected bounded prefix (Viterbi discipline);
-    the oracle brute-forces all O(n²) substrings — feasible at the gate
-    because n is pinned at {_SA_CHARS}, which is exactly why the
-    automaton is the 100-TB path."""
-    d = _t(spark, sf_dir, "documents")
-    t = (d.filter(F.col("doc_id") == 0)
-         .select(F.substring("text", 1, _SA_CHARS).alias("t"))
-         .collect()[0]["t"])
-    # suffix automaton construction
-    sa_len = [0]
-    sa_link = [-1]
-    sa_next: list[dict] = [{}]
-    sa_clone = [False]
-    sa_fp = [0]           # end position (1-based) of first occurrence
-    last = 0
-    for pos, ch in enumerate(t, start=1):
-        cur = len(sa_len)
-        sa_len.append(sa_len[last] + 1)
-        sa_link.append(-1)
-        sa_next.append({})
-        sa_clone.append(False)
-        sa_fp.append(pos)
-        p = last
-        while p != -1 and ch not in sa_next[p]:
-            sa_next[p][ch] = cur
-            p = sa_link[p]
-        if p == -1:
-            sa_link[cur] = 0
-        else:
-            q = sa_next[p][ch]
-            if sa_len[p] + 1 == sa_len[q]:
-                sa_link[cur] = q
-            else:
-                clone = len(sa_len)
-                sa_len.append(sa_len[p] + 1)
-                sa_link.append(sa_link[q])
-                sa_next.append(dict(sa_next[q]))
-                sa_clone.append(True)
-                sa_fp.append(sa_fp[q])
-                while p != -1 and sa_next[p].get(ch) == q:
-                    sa_next[p][ch] = clone
-                    p = sa_link[p]
-                sa_link[q] = clone
-                sa_link[cur] = clone
-        last = cur
-    n_states = len(sa_len)
-    n_distinct = sum(sa_len[v] - sa_len[sa_link[v]]
-                     for v in range(1, n_states))
-    cnt = [0 if sa_clone[v] else 1 for v in range(n_states)]
-    for v in sorted(range(1, n_states), key=lambda v: -sa_len[v]):
-        cnt[sa_link[v]] += cnt[v]
-    best = None
-    max_l = max((sa_len[v] for v in range(1, n_states) if cnt[v] >= 2),
-                default=0)
-    for v in range(1, n_states):
-        if cnt[v] >= 2 and sa_len[v] == max_l:
-            sub = t[sa_fp[v] - max_l:sa_fp[v]]
-            if best is None or sub < best:
-                best = sub
-    return spark.createDataFrame(
-        [(len(t), n_distinct, max_l, best)],
-        "n_chars int, n_distinct_substrings long, lrs_len int, lrs string")
-
-
-_QINI_SQL = """
-WITH u AS (
-  SELECT user_id,
-         CAST(count(*) FILTER (WHERE event_type = 'click') AS HUGEINT)
-             AS score,
-         CASE WHEN count(*) FILTER (WHERE event_type = 'purchase') > 0
-              THEN 1 ELSE 0 END AS resp,
-         CASE WHEN substr(md5('uplift:' || CAST(user_id AS VARCHAR)),
-                          1, 1) < '8' THEN 1 ELSE 0 END AS treated
-  FROM events GROUP BY 1
-), r AS (
-  SELECT *, row_number() OVER (ORDER BY score DESC, user_id) AS rn,
-         count(*) OVER () AS n
-  FROM u
-), dec AS (
-  SELECT CAST((rn - 1) * 10 // n AS INTEGER) + 1 AS decile,
-         CAST(sum(treated) AS HUGEINT) AS nt,
-         CAST(sum(1 - treated) AS HUGEINT) AS nc,
-         CAST(sum(CASE WHEN treated = 1 THEN resp ELSE 0 END) AS HUGEINT)
-             AS rt,
-         CAST(sum(CASE WHEN treated = 0 THEN resp ELSE 0 END) AS HUGEINT)
-             AS rc
-  FROM r GROUP BY 1
-), c AS (
-  SELECT decile,
-         sum(nt) OVER w AS cnt_t, sum(nc) OVER w AS cnt_c,
-         sum(rt) OVER w AS cr_t, sum(rc) OVER w AS cr_c
-  FROM dec WINDOW w AS (ORDER BY decile)
-)
-SELECT decile, CAST(cnt_t AS BIGINT) AS n_treated,
-       CAST(cnt_c AS BIGINT) AS n_control,
-       CAST(cr_t AS BIGINT) AS resp_treated,
-       CAST(cr_c AS BIGINT) AS resp_control,
-       CAST(CASE WHEN cnt_c = 0 THEN NULL
-                 ELSE cr_t * 1000000
-                      - cr_c * cnt_t * 1000000 // cnt_c END AS BIGINT)
-           AS qini_e6
-FROM c
-"""
-
-
-@register("q_events_uplift_qini", _QINI_SQL)
-def q_events_uplift_qini(spark, sf_dir):
-    """Qini curve for uplift-model evaluation (Radcliffe 2007): users
-    ranked by a targeting score (click count, ties to user_id), split
-    into a deterministic md5 treatment/control assignment (the
-    data_hash_split discipline), then per cumulative decile the Qini gain
-    R_t − R_c·N_t/N_c — incremental responders versus random targeting,
-    the decision-layer metric on top of q_events_abtest_lift's single
-    average effect and q_events_cuped_lift's variance reduction. Exact
-    integer counts everywhere, ONE floored e6 division per decile. Fully
-    distributed: one per-user aggregate, one rank window, a 10-row
-    cumulative window."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    u = (e.groupBy("user_id")
-         .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).cast(dec).alias("score"),
-              F.max(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).alias("resp"))
-         .withColumn("treated", F.when(
-             F.substring(F.md5(F.concat(F.lit("uplift:"),
-                                        F.col("user_id").cast("string"))),
-                         1, 1) < "8", 1).otherwise(0)))
-    r = u.select("*",
-                 F.row_number().over(Window.orderBy(F.desc("score"),
-                                                    F.asc("user_id")))
-                 .alias("rn"),
-                 F.count(F.lit(1)).over(
-                     Window.rowsBetween(Window.unboundedPreceding,
-                                        Window.unboundedFollowing))
-                 .alias("n"))
-    d = (r.groupBy(F.expr("CAST((rn - 1) * 10 div n AS INT) + 1")
-                   .alias("decile"))
-         .agg(F.sum("treated").cast(dec).alias("nt"),
-              F.sum(F.expr("1 - treated")).cast(dec).alias("nc"),
-              F.sum(F.expr("CASE WHEN treated = 1 THEN resp ELSE 0 END"))
-              .cast(dec).alias("rt"),
-              F.sum(F.expr("CASE WHEN treated = 0 THEN resp ELSE 0 END"))
-              .cast(dec).alias("rc")))
-    w = Window.orderBy("decile").rowsBetween(Window.unboundedPreceding, 0)
-    c = d.select("decile",
-                 F.sum("nt").over(w).alias("cnt_t"),
-                 F.sum("nc").over(w).alias("cnt_c"),
-                 F.sum("rt").over(w).alias("cr_t"),
-                 F.sum("rc").over(w).alias("cr_c"))
-    return c.select(
-        "decile", F.col("cnt_t").cast("long").alias("n_treated"),
-        F.col("cnt_c").cast("long").alias("n_control"),
-        F.col("cr_t").cast("long").alias("resp_treated"),
-        F.col("cr_c").cast("long").alias("resp_control"),
-        F.expr("CAST(CASE WHEN cnt_c = 0 THEN NULL"
-               " ELSE cr_t * 1000000"
-               " - cr_c * cnt_t * 1000000 div cnt_c END AS BIGINT)")
-        .alias("qini_e6"))
-
-
-_MINCUT_SQL_TPL = """
-WITH m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {lex}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY 1, 2 HAVING count(*) >= 330
-), vs AS (
-  SELECT DISTINCT v FROM (
-    SELECT a AS v FROM e UNION ALL SELECT b FROM e) u
-), st AS (SELECT min(v) AS s, max(v) AS t FROM vs),
-mid AS (
-  SELECT v, row_number() OVER (ORDER BY v) - 1 AS idx
-  FROM vs, st WHERE v <> st.s AND v <> st.t
-), kk AS (SELECT CAST(count(*) AS BIGINT) AS k FROM mid),
-cuts AS (
-  SELECT g.mask,
-         sum(CASE WHEN (CASE WHEN e.a = st.s THEN 1
-                             WHEN e.a = st.t THEN 0
-                             ELSE (g.mask >> ma.idx) & 1 END)
-                  <> (CASE WHEN e.b = st.s THEN 1
-                           WHEN e.b = st.t THEN 0
-                           ELSE (g.mask >> mb.idx) & 1 END)
-             THEN 1 ELSE 0 END) AS cut
-  FROM generate_series(0, 16383) AS g(mask), kk, st, e
-  LEFT JOIN mid ma ON ma.v = e.a
-  LEFT JOIN mid mb ON mb.v = e.b
-  WHERE g.mask < (CAST(1 AS BIGINT) << kk.k)
-  GROUP BY 1
-), best AS (
-  SELECT mask, cut FROM cuts ORDER BY cut, mask LIMIT 1
-), side AS (
-  SELECT string_agg(x, ',' ORDER BY x) AS s_side,
-         CAST(count(*) AS INTEGER) AS n_s_side
-  FROM (
-    SELECT st.s AS x FROM st
-    UNION ALL
-    SELECT mid.v FROM mid, best WHERE (best.mask >> mid.idx) & 1 = 1) q
-)
-SELECT st.s, st.t, CAST(best.cut AS BIGINT) AS cut_value,
-       side.n_s_side, side.s_side
-FROM st, best, side
-"""
-
-
-@register("kg_min_cut_docs",
-          _MINCUT_SQL_TPL.format(lex=kg_docs.lexicon_values_sql()))
-def kg_min_cut_docs(spark, sf_dir):
-    """Minimum s-t cut / edge connectivity on the sparsified
-    co-occurrence graph (s = lexicographically first vertex, t = last):
-    max-flow by EDMONDS-KARP with unit capacities, and the s-side of the
-    CANONICAL minimum cut — the residual-reachable set, which by
-    submodularity is the unique inclusion-minimal minimizer, hence
-    exactly the numerically smallest subset mask the oracle's brute
-    2^(V−2) enumeration picks (strict subset ⇒ smaller integer). The
-    robustness bottleneck number next to kg_attack_robustness's
-    node-removal curve and kg_bridges' single-edge version. Engine:
-    Edmonds-Karp on the collected vocabulary projection (the _scc_driver
-    vocabulary-bounded precedent; the data-sized work is the one
-    co-occurrence aggregate); oracle: every cut evaluated, min (cut,
-    mask)."""
-    edges = [(r["term_a"], r["term_b"])
-             for r in _cooc_edges(spark, sf_dir, 330)
-             .select("term_a", "term_b").collect()]
-    verts = sorted({v for ab in edges for v in ab})
-    s, t = verts[0], verts[-1]
-    cap: dict = {}
-    adj: dict = {v: set() for v in verts}
-    for a, b in edges:
-        cap[(a, b)] = cap.get((a, b), 0) + 1
-        cap[(b, a)] = cap.get((b, a), 0) + 1
-        adj[a].add(b)
-        adj[b].add(a)
-    flow = 0
-    while True:
-        parent = {s: None}
-        queue = [s]
-        while queue and t not in parent:
-            v = queue.pop(0)
-            for w in sorted(adj[v]):
-                if w not in parent and cap.get((v, w), 0) > 0:
-                    parent[w] = v
-                    queue.append(w)
-        if t not in parent:
-            break
-        path = []
-        v = t
-        while parent[v] is not None:
-            path.append((parent[v], v))
-            v = parent[v]
-        aug = min(cap[(u, w)] for u, w in path)
-        for u, w in path:
-            cap[(u, w)] -= aug
-            cap[(w, u)] = cap.get((w, u), 0) + aug
-        flow += aug
-    reach = {s}
-    queue = [s]
-    while queue:
-        v = queue.pop(0)
-        for w in sorted(adj[v]):
-            if w not in reach and cap.get((v, w), 0) > 0:
-                reach.add(w)
-                queue.append(w)
-    side = sorted(reach)
-    return spark.createDataFrame(
-        [(s, t, flow, len(side), ",".join(side))],
-        "s string, t string, cut_value long, n_s_side int, s_side string")
-
-
-_LPT_N, _LPT_M = 30, 4   # jobs, machines
-
-_LPT_SQL = f"""
-WITH RECURSIVE jobs AS (
-  SELECT p_partkey, CAST(p_size AS HUGEINT) AS sz,
-         row_number() OVER (ORDER BY p_size DESC, p_partkey) AS i
-  FROM part ORDER BY p_size DESC, p_partkey LIMIT {_LPT_N}
-), dp AS (
-  SELECT 0 AS i,
-         list_transform(range(1, {_LPT_M} + 1),
-                        x -> CAST(0 AS HUGEINT)) AS loads,
-         CAST([] AS INTEGER[]) AS asg
-  UNION ALL
-  SELECT d.i + 1,
-         list_transform(range(1, {_LPT_M} + 1), x ->
-           CASE WHEN x = list_position(d.loads, list_min(d.loads))
-                THEN d.loads[CAST(x AS INTEGER)] + j.sz
-                ELSE d.loads[CAST(x AS INTEGER)] END),
-         list_append(d.asg,
-                     CAST(list_position(d.loads, list_min(d.loads))
-                          AS INTEGER))
-  FROM dp d JOIN jobs j ON j.i = d.i + 1
-  WHERE d.i < {_LPT_N}
-), fin AS (
-  SELECT loads, asg FROM dp WHERE i = {_LPT_N}
-), tot AS (
-  SELECT sum(sz) AS ts, max(sz) AS mx FROM jobs
-), per AS (
-  SELECT g.m, fin.loads[g.m] AS load,
-         (SELECT count(*) FROM jobs j, fin f2
-          WHERE f2.asg[j.i] = g.m) AS n_jobs
-  FROM generate_series(1, {_LPT_M}) AS g(m), fin
-)
-SELECT CAST(per.m AS INTEGER) AS machine, CAST(per.load AS BIGINT) AS load,
-       CAST(per.n_jobs AS BIGINT) AS n_jobs,
-       CAST((SELECT list_max(loads) FROM fin) AS BIGINT) AS makespan,
-       CAST((SELECT list_max(loads) FROM fin) * 1000000
-            // greatest((tot.ts + {_LPT_M} - 1) // {_LPT_M}, tot.mx)
-            AS BIGINT) AS ratio_to_lb_e6
-FROM per, tot
-"""
-
-
-@register("q_parts_lpt_makespan", _LPT_SQL)
-def q_parts_lpt_makespan(spark, sf_dir):
-    """Longest-Processing-Time-first scheduling of the {_LPT_N} largest
-    parts onto {_LPT_M} machines (Graham 1969, the 4/3-approximation):
-    jobs in size-desc order each go to the least-loaded machine (ties to
-    the lowest index — list_position's first match), reported per machine
-    with the makespan and its exact e6 ratio to the lower bound
-    max(⌈Σ/m⌉, max job). The bin-packing sibling of data_pack_ffd with
-    the load-balancing objective instead of the capacity objective. The
-    oracle replays the greedy through a loads-list recursion; the engine
-    collects the bounded job pool (Viterbi discipline) and replays
-    identically."""
-    p = _t(spark, sf_dir, "part")
-    rows = (p.select("p_partkey", F.col("p_size").cast("long").alias("sz"),
-                     F.row_number().over(
-                         Window.orderBy(F.desc("p_size"),
-                                        F.asc("p_partkey"))).alias("i"))
-            .filter(F.col("i") <= _LPT_N).orderBy("i").collect())
-    loads = [0] * _LPT_M
-    njobs = [0] * _LPT_M
-    for r in rows:
-        k = loads.index(min(loads))
-        loads[k] += int(r["sz"])
-        njobs[k] += 1
-    ts = sum(int(r["sz"]) for r in rows)
-    mx = max(int(r["sz"]) for r in rows)
-    lb = max((ts + _LPT_M - 1) // _LPT_M, mx)
-    mk = max(loads)
-    out = [(m + 1, loads[m], njobs[m], mk, mk * 1000000 // lb)
-           for m in range(_LPT_M)]
-    return spark.createDataFrame(
-        out, "machine int, load long, n_jobs long, makespan long,"
-             " ratio_to_lb_e6 long")
-
-
-_RQA_EPS = 30000   # e6-share recurrence threshold
-
-_RQA_SQL = f"""
-WITH d0 AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS HUGEINT) AS c
-  FROM events GROUP BY 1
-), d AS (
-  SELECT row_number() OVER (ORDER BY day) AS i,
-         c * 1000000 // (SELECT sum(c) FROM d0) AS v
-  FROM d0
-), rec AS (
-  SELECT a.i AS i, b.i AS j
-  FROM d a JOIN d b ON a.i < b.i
-  WHERE abs(a.v - b.v) <= {_RQA_EPS}
-), runs0 AS (
-  SELECT j - i AS diag,
-         i - row_number() OVER (PARTITION BY j - i ORDER BY i) AS grp
-  FROM rec
-), rlg AS (
-  SELECT diag, grp, CAST(count(*) AS HUGEINT) AS rl
-  FROM runs0 GROUP BY 1, 2
-), rl AS (
-  SELECT CAST(coalesce(sum(rl), 0) AS HUGEINT) AS n_rec,
-         CAST(coalesce(sum(rl) FILTER (WHERE rl >= 2), 0) AS HUGEINT)
-             AS n_det,
-         CAST(coalesce(max(rl), 0) AS BIGINT) AS lmax
-  FROM rlg
-), nn AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM d)
-SELECT CAST(nn.n AS BIGINT) AS n_days,
-       CAST(rl.n_rec AS BIGINT) AS n_recurrences,
-       CAST(rl.n_rec * 1000000 * 2 // (nn.n * (nn.n - 1)) AS BIGINT)
-           AS rr_e6,
-       CAST(CASE WHEN rl.n_rec = 0 THEN NULL
-                 ELSE rl.n_det * 1000000 // rl.n_rec END AS BIGINT)
-           AS det_e6,
-       rl.lmax
-FROM rl, nn
-"""
-
-
-@register("q_events_rqa_determinism", _RQA_SQL)
-def q_events_rqa_determinism(spark, sf_dir):
-    """Recurrence quantification analysis of the daily-volume series
-    (Webber & Zbilut): recurrence rate (|share_i − share_j| ≤ ε over
-    upper-triangle pairs, e6 integer shares so the threshold is exact),
-    DETERMINISM (fraction of recurrence points on diagonal lines of
-    length ≥ 2 — consecutive-i runs per j−i diagonal via the
-    gaps-and-islands row_number difference), and the longest diagonal
-    line — the nonlinear-dynamics regime lens next to q_events_hurst_rs
-    and q_events_lz76_complexity. Fully distributed: one daily
-    aggregate, one calendar²-bounded self-join, two window passes; every
-    ratio is a single floored integer division."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d0 = (e.groupBy(F.col("ts").cast("date").alias("day"))
-          .agg(F.count(F.lit(1)).cast(dec).alias("c")))
-    tot = d0.agg(F.sum("c").alias("t"))
-    d = (d0.crossJoin(F.broadcast(tot))
-         .select(F.row_number().over(Window.orderBy("day")).alias("i"),
-                 F.expr("c * 1000000 div t").alias("v")))
-    b = d.select(F.col("i").alias("j"), F.col("v").alias("w"))
-    rec = (d.join(b, F.col("i") < F.col("j"))
-           .filter(F.abs(F.col("v") - F.col("w")) <= _RQA_EPS)
-           .select("i", "j"))
-    wd = Window.partitionBy(F.expr("j - i")).orderBy("i")
-    runs = rec.select(
-        (F.col("i") - F.row_number().over(wd)).alias("grp"),
-        F.expr("j - i").alias("diag"))
-    rl = (runs.groupBy("diag", "grp")
-          .agg(F.count(F.lit(1)).cast(dec).alias("rl")))
-    agg = rl.agg(F.sum("rl").alias("n_rec"),
-                 F.sum(F.when(F.col("rl") >= 2, F.col("rl"))
-                       .otherwise(0)).alias("n_det"),
-                 F.max("rl").cast("long").alias("lmax"))
-    nn = d.agg(F.count(F.lit(1)).cast(dec).alias("n"))
-    return (agg.crossJoin(nn)
-            .select(F.col("n").cast("long").alias("n_days"),
-                    F.coalesce(F.col("n_rec"), F.lit(0)).cast("long")
-                    .alias("n_recurrences"),
-                    F.expr("CAST(coalesce(n_rec, 0) * 1000000 * 2"
-                           " div (n * (n - 1)) AS BIGINT)").alias("rr_e6"),
-                    F.expr("CAST(CASE WHEN coalesce(n_rec, 0) = 0"
-                           " THEN NULL ELSE n_det * 1000000 div n_rec END"
-                           " AS BIGINT)").alias("det_e6"),
-                    F.coalesce("lmax", F.lit(0)).alias("lmax")))
-
-
-_SEG_SQL = """
-WITH RECURSIVE d0 AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS HUGEINT) AS x
-  FROM events GROUP BY 1
-), mi AS (
-  SELECT day, x, row_number() OVER (ORDER BY day) AS t FROM d0
-), tc AS (SELECT CAST(count(*) AS INTEGER) AS tt FROM mi),
-beta AS (
-  SELECT (CAST(count(*) AS HUGEINT) * sum(x * x) - sum(x) * sum(x))
-         * 1000000 // CAST(count(*) AS HUGEINT) // 20 AS b
-  FROM mi
-), dp AS (
-  SELECT 0 AS t, [-(SELECT b FROM beta)] AS fl,
-         CAST([] AS INTEGER[]) AS bl,
-         CAST([] AS HUGEINT[]) AS s1l, CAST([] AS HUGEINT[]) AS s2l
-  UNION ALL
-  SELECT d0.t + 1,
-         list_append(d0.fl, list_min(cand)),
-         list_append(d0.bl,
-                     CAST(list_position(cand, list_min(cand)) AS INTEGER)),
-         s1l2, s2l2
-  FROM dp d0 JOIN mi ON mi.t = d0.t + 1 CROSS JOIN beta,
-  LATERAL (SELECT
-    list_append(d0.s1l,
-                coalesce(d0.s1l[d0.t], CAST(0 AS HUGEINT)) + mi.x) AS s1l2,
-    list_append(d0.s2l,
-                coalesce(d0.s2l[d0.t], CAST(0 AS HUGEINT))
-                + mi.x * mi.x) AS s2l2) lat,
-  LATERAL (SELECT
-    list_transform(range(1, d0.t + 2), j ->
-      d0.fl[j] + beta.b
-      + (CAST(d0.t + 2 - j AS HUGEINT)
-           * (s2l2[d0.t + 1] - coalesce(s2l2[j - 1], CAST(0 AS HUGEINT)))
-         - (s1l2[d0.t + 1] - coalesce(s1l2[j - 1], CAST(0 AS HUGEINT)))
-           * (s1l2[d0.t + 1] - coalesce(s1l2[j - 1], CAST(0 AS HUGEINT))))
-        * 1000000 // CAST(d0.t + 2 - j AS HUGEINT)) AS cand) lc
-), dpf AS (
-  SELECT fl, bl, s1l, s2l FROM dp WHERE t = (SELECT tt FROM tc)
-), bt AS (
-  SELECT (SELECT CAST(bl[(SELECT tt FROM tc)] AS INTEGER) FROM dpf) AS frm,
-         (SELECT tt FROM tc) AS upto
-  UNION ALL
-  SELECT CAST(d.bl[b.frm - 1] AS INTEGER), b.frm - 1
-  FROM bt b, dpf d WHERE b.frm > 1
-), segs AS (
-  SELECT row_number() OVER (ORDER BY frm) AS seg_idx, frm, upto FROM bt
-)
-SELECT CAST(s.seg_idx AS INTEGER) AS seg_idx,
-       m1.day AS day_from, m2.day AS day_to,
-       CAST(s.upto - s.frm + 1 AS INTEGER) AS n_days,
-       CAST((CAST(s.upto - s.frm + 1 AS HUGEINT)
-               * (d.s2l[s.upto] - coalesce(d.s2l[s.frm - 1], 0))
-             - (d.s1l[s.upto] - coalesce(d.s1l[s.frm - 1], 0))
-               * (d.s1l[s.upto] - coalesce(d.s1l[s.frm - 1], 0)))
-            * 1000000 // CAST(s.upto - s.frm + 1 AS HUGEINT) AS BIGINT)
-           AS seg_cost_e6,
-       CAST(d.fl[(SELECT tt FROM tc) + 1] AS BIGINT) AS total_cost_e6,
-       CAST((SELECT count(*) FROM segs) AS INTEGER) AS n_segments
-FROM segs s
-CROSS JOIN dpf d
-JOIN mi m1 ON m1.t = s.frm
-JOIN mi m2 ON m2.t = s.upto
-"""
-
-
-@register("q_events_optimal_segmentation", _SEG_SQL)
-def q_events_optimal_segmentation(spark, sf_dir):
-    """EXACT penalized multi-changepoint segmentation of the daily
-    volume series (optimal partitioning, the DP that PELT prunes):
-    F(t) = min_s F(s) + C(s+1,t) + β with within-segment SSE cost —
-    carried as the exact integer (n·ΣΔx² − (Σx)²)·10⁶//n via prefix sums
-    (one floor per evaluated segment, identical in both engines), β
-    data-derived as 5% of the whole-series cost, ties to the EARLIEST
-    split. The exact-optimum complement of q_events_changepoint's
-    single-CUSUM peak and q_events_piecewise_trend's fixed break. Output:
-    the optimal segmentation with per-segment costs. The oracle carries
-    F/argmin/prefix lists through one recursion and backtracks; the
-    engine collects the calendar-bounded series (Viterbi discipline) and
-    replays the identical O(T²) DP."""
-    e = _t(spark, sf_dir, "events")
-    rows = (e.groupBy(F.col("ts").cast("date").alias("day"))
-            .agg(F.count(F.lit(1)).cast("long").alias("x"))
-            .orderBy("day").collect())
-    days = [r["day"] for r in rows]
-    xs = [int(r["x"]) for r in rows]
-    T = len(xs)
-    s1 = [0] * (T + 1)
-    s2 = [0] * (T + 1)
-    for t in range(1, T + 1):
-        s1[t] = s1[t - 1] + xs[t - 1]
-        s2[t] = s2[t - 1] + xs[t - 1] * xs[t - 1]
-
-    def cost(j, t):
-        n = t - j + 1
-        return (n * (s2[t] - s2[j - 1])
-                - (s1[t] - s1[j - 1]) ** 2) * 1000000 // n
-
-    beta = cost(1, T) // 20
-    f = [0] * (T + 1)
-    f[0] = -beta
-    back = [0] * (T + 1)
-    for t in range(1, T + 1):
-        best, bj = None, 0
-        for j in range(1, t + 1):
-            c = f[j - 1] + beta + cost(j, t)
-            if best is None or c < best:
-                best, bj = c, j
-        f[t], back[t] = best, bj
-    segs = []
-    upto = T
-    while upto >= 1:
-        frm = back[upto]
-        segs.append((frm, upto))
-        upto = frm - 1
-    segs.reverse()
-    out = [(k + 1, days[frm - 1], days[upto - 1], upto - frm + 1,
-            cost(frm, upto), f[T], len(segs))
-           for k, (frm, upto) in enumerate(segs)]
-    return spark.createDataFrame(
-        out, "seg_idx int, day_from date, day_to date, n_days int,"
-             " seg_cost_e6 long, total_cost_e6 long, n_segments int")
-
-
-_COV_K = 8   # greedy selection budget
-
-_COV_SQL = f"""
-WITH RECURSIVE ds AS MATERIALIZED (
-  SELECT doc_id,
-         list_sort(list_distinct(list_transform(
-           range(1, len(list_filter(string_split(text, ' '),
-                                    w -> w <> ''))),
-           i -> list_filter(string_split(text, ' '), w -> w <> '')[i]
-                || ' '
-                || list_filter(string_split(text, ' '),
-                               w -> w <> '')[i + 1]))) AS ws
-  FROM documents
-), st AS (
-  SELECT 0 AS step, CAST(NULL AS BIGINT) AS doc_id,
-         CAST(0 AS BIGINT) AS gain, CAST([] AS VARCHAR[]) AS covered
-  UNION ALL
-  SELECT s.step + 1,
-         arg_max(d.doc_id,
-           CAST(len(list_filter(d.ws,
-                w -> NOT list_contains(s.covered, w))) AS BIGINT)
-             * 1000000000 - d.doc_id),
-         max(CAST(len(list_filter(d.ws,
-                w -> NOT list_contains(s.covered, w))) AS BIGINT)),
-         list_sort(list_distinct(list_concat(s.covered,
-           arg_max(d.ws,
-             CAST(len(list_filter(d.ws,
-                  w -> NOT list_contains(s.covered, w))) AS BIGINT)
-               * 1000000000 - d.doc_id))))
-  FROM st s, ds d
-  WHERE s.step < {_COV_K}
-  GROUP BY s.step, s.covered
-  HAVING max(len(list_filter(d.ws,
-                 w -> NOT list_contains(s.covered, w)))) > 0
-)
-SELECT CAST(step AS INTEGER) AS step, doc_id, CAST(gain AS BIGINT) AS gain,
-       CAST(len(covered) AS BIGINT) AS covered_total
-FROM st WHERE step >= 1
-"""
-
-
-@register("data_greedy_coverage", _COV_SQL)
-def data_greedy_coverage(spark, sf_dir):
-    """Greedy submodular maximum-coverage selection (Nemhauser et al.
-    1978, the (1−1/e) guarantee): pick up to {_COV_K} documents, each
-    step the one adding the most not-yet-covered distinct words (ties to
-    the smallest doc_id), stopping early when coverage saturates — the
-    coreset/data-selection primitive behind 'cover the bigram space with
-    the fewest documents' curation. The oracle replays the greedy loop
-    as a recursion with a LATERAL argmax; the engine runs each round's
-    marginal-gain scan DISTRIBUTED (array_except against the
-    vocabulary-bounded covered set, one orderBy-limit argmax per round —
-    the greedy step is inherently sequential, the BPE-merge discipline).
-    Output: the selection order with marginal gains and the coverage
-    curve."""
-    d = _t(spark, sf_dir, "documents")
-    ds = d.select("doc_id", F.expr(
-        "CASE WHEN size(filter(split(text, ' '), w -> w != '')) < 2"
-        " THEN CAST(array() AS array<string>)"
-        " ELSE sort_array(array_distinct(transform("
-        "   sequence(1, size(filter(split(text, ' '), w -> w != '')) - 1),"
-        "   i -> concat(element_at(filter(split(text, ' '),"
-        "                                 w -> w != ''), i), ' ',"
-        "               element_at(filter(split(text, ' '),"
-        "                                 w -> w != ''), i + 1))))) END")
-        .alias("ws")).persist()
-    covered: list = []
-    out = []
-    for step in range(1, _COV_K + 1):
-        lit_cov = F.array(*[F.lit(w) for w in covered]) if covered \
-            else F.array().cast("array<string>")
-        pick = (ds.select(
-            "doc_id",
-            F.size(F.array_except("ws", lit_cov)).cast("long")
-            .alias("gain"),
-            F.array_except("ws", lit_cov).alias("nw"))
-            .orderBy(F.desc("gain"), F.asc("doc_id")).limit(1)
-            .collect()[0])
-        if int(pick["gain"]) <= 0:
-            break
-        covered = sorted(set(covered) | set(pick["nw"]))
-        out.append((step, int(pick["doc_id"]), int(pick["gain"]),
-                    len(covered)))
-    return spark.createDataFrame(
-        out, "step int, doc_id long, gain long, covered_total long")
-
-
-_ISCHED_SQL = """
-WITH RECURSIVE ev AS (
-  SELECT user_id,
-         CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS s,
-         CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT)
-           + CAST(floor(value * 60) AS BIGINT) AS e,
-         row_number() OVER (PARTITION BY user_id
-                            ORDER BY CAST(floor(epoch(CAST(ts AS
-                                TIMESTAMP))) AS BIGINT)
-                              + CAST(floor(value * 60) AS BIGINT),
-                              ts, event_id) AS rn
-  FROM events
-), nmax AS (
-  SELECT user_id, max(rn) AS n FROM ev GROUP BY user_id
-), st AS (
-  SELECT user_id, rn, e AS last_end, 1 AS taken
-  FROM ev WHERE rn = 1
-  UNION ALL
-  SELECT e2.user_id, e2.rn,
-         CASE WHEN e2.s >= st.last_end THEN e2.e ELSE st.last_end END,
-         st.taken + CASE WHEN e2.s >= st.last_end THEN 1 ELSE 0 END
-  FROM st JOIN ev e2 ON e2.user_id = st.user_id AND e2.rn = st.rn + 1
-)
-SELECT st.user_id, CAST(nmax.n AS BIGINT) AS n_events,
-       CAST(st.taken AS BIGINT) AS n_scheduled,
-       CAST(st.last_end AS BIGINT) AS last_end
-FROM st JOIN nmax ON nmax.user_id = st.user_id AND nmax.n = st.rn
-"""
-
-
-@register("q_events_interval_scheduling", _ISCHED_SQL)
-def q_events_interval_scheduling(spark, sf_dir):
-    """Activity selection per user: treat each event as an interval
-    [ts, ts + value minutes] and run the PROVABLY OPTIMAL earliest-
-    finish-first greedy (ties by start then event_id; half-open
-    intervals, so touching endpoints both fit) — the maximum number of
-    non-overlapping engagements a user's stream supports, the classic
-    greedy next to LPT's load balancing and knapsack's budgeting. The
-    scan is a non-linear sequential recurrence (last_end clamps), so the
-    engine replays it per user in applyInPandas (the token-bucket
-    discipline — per-user grouping IS the 10⁹-user shard key) against
-    the oracle's rank-join recursion."""
-    import pandas as pd
-
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", F.unix_timestamp("ts").alias("s"),
-        (F.unix_timestamp("ts")
-         + F.expr("CAST(floor(value * 60) AS BIGINT)")).alias("e"),
-        "ts", "event_id")
-
-    def replay(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["e", "ts", "event_id"], kind="mergesort")
-        last_end = None
-        taken = 0
-        for s, en in zip(pdf["s"], pdf["e"]):
-            if last_end is None or int(s) >= last_end:
-                last_end = int(en)
-                taken += 1
-        return pd.DataFrame(
-            [(pdf["user_id"].iloc[0], len(pdf), taken, last_end)],
-            columns=["user_id", "n_events", "n_scheduled", "last_end"])
-
-    return e.groupBy("user_id").applyInPandas(
-        replay, schema="user_id long, n_events long, n_scheduled long,"
-                       " last_end long")
-
-
-_MOLLOY_SQL_TPL = """
-WITH m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {lex}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY 1, 2 HAVING count(*) >= 330
-), deg AS (
-  SELECT v, CAST(count(*) AS HUGEINT) AS k FROM (
-    SELECT a AS v FROM e UNION ALL SELECT b FROM e) u GROUP BY 1
-)
-SELECT CAST(count(*) AS BIGINT) AS n_nodes,
-       CAST(sum(k) / 2 AS BIGINT) AS n_edges,
-       CAST(sum(k) * 1000000 // count(*) AS BIGINT) AS mean_deg_e6,
-       CAST(sum(k * k) * 1000000 // sum(k) AS BIGINT) AS kappa_e6,
-       CAST(CASE WHEN sum(k * k) > 2 * sum(k) THEN 1 ELSE 0 END
-            AS INTEGER) AS supercritical
-FROM deg
-"""
-
-
-@register("kg_molloy_reed",
-          _MOLLOY_SQL_TPL.format(lex=kg_docs.lexicon_values_sql()))
-def kg_molloy_reed(spark, sf_dir):
-    """Molloy-Reed percolation criterion on the sparsified co-occurrence
-    graph: κ = ⟨k²⟩/⟨k⟩ — a giant component exists in the
-    configuration-model sense iff κ > 2 — the one-number robustness
-    predictor that explains kg_attack_robustness's empirical curve
-    (scale-free κ ≫ 2 ⇒ robust to random failure, fragile to targeted
-    removal). Exact integer degree moments, two floored e6 ratios, one
-    integer cross-multiplied verdict. One vocabulary-bounded degree
-    aggregate after the co-occurrence count."""
-    edges = _cooc_edges(spark, sf_dir, 330)
-    deg = (edges.select(F.col("term_a").alias("v"))
-           .unionByName(edges.select(F.col("term_b").alias("v")))
-           .groupBy("v")
-           .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("k")))
-    return deg.agg(
-        F.count(F.lit(1)).cast("long").alias("n_nodes"),
-        F.expr("CAST(sum(k) / 2 AS BIGINT)").alias("n_edges"),
-        F.expr("CAST(sum(k) * 1000000 div count(*) AS BIGINT)")
-        .alias("mean_deg_e6"),
-        F.expr("CAST(sum(k * k) * 1000000 div sum(k) AS BIGINT)")
-        .alias("kappa_e6"),
-        F.expr("CAST(CASE WHEN sum(k * k) > 2 * sum(k) THEN 1 ELSE 0 END"
-               " AS INT)").alias("supercritical"))
-
-
-_CDC_W, _CDC_B, _CDC_M, _CDC_MASK = 8, 31, 1048576, 64
-
-
-def _cdc_hash_terms(text_expr: str, pos: str) -> str:
-    """Σ_j ascii(substr(text, pos−j, 1))·Bʲ — identical expansion in both
-    engines (ascii() returns the codepoint in Spark and DuckDB)."""
-    return " + ".join(
-        f"CAST(ascii(substr({text_expr},"
-        f" CAST({pos} AS INTEGER) - {j}, 1)) AS BIGINT)"
-        f" * {_CDC_B ** j}"
-        for j in range(_CDC_W))
-
-
-_CDC_SQL = f"""
-WITH pos AS (
-  SELECT d.doc_id, d.text, g.i,
-         ({_cdc_hash_terms('d.text', 'g.i')}) % {_CDC_M} AS h
-  FROM documents d, generate_series({_CDC_W}, 2000) AS g(i)
-  WHERE g.i <= length(d.text)
-), cuts AS (
-  SELECT doc_id, text, i AS cut FROM pos WHERE h % {_CDC_MASK} = 0
-  UNION
-  SELECT doc_id, text, length(text) FROM documents
-), spans AS (
-  SELECT doc_id,
-         coalesce(lag(cut) OVER (PARTITION BY doc_id ORDER BY cut), 0)
-           + 1 AS s,
-         cut AS e, text
-  FROM cuts
-), chunks AS (
-  SELECT doc_id, md5(substr(text, CAST(s AS INTEGER),
-                            CAST(e - s + 1 AS INTEGER))) AS cmd5,
-         e - s + 1 AS clen
-  FROM spans WHERE e >= s
-), tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_chunks,
-         CAST(count(DISTINCT cmd5) AS BIGINT) AS n_distinct
-  FROM chunks
-)
-SELECT c.cmd5 AS chunk_md5, CAST(max(c.clen) AS BIGINT) AS chunk_len,
-       CAST(count(*) AS BIGINT) AS n_occurrences,
-       tot.n_chunks, tot.n_distinct,
-       CAST((tot.n_chunks - tot.n_distinct) * 1000000 // tot.n_chunks
-            AS BIGINT) AS dup_ratio_e6
-FROM chunks c, tot
-GROUP BY c.cmd5, tot.n_chunks, tot.n_distinct
-HAVING count(*) >= 2
-ORDER BY count(*) DESC, c.cmd5 LIMIT 20
-"""
-
-
-@register("dedup_cdc_chunks", _CDC_SQL)
-def dedup_cdc_chunks(spark, sf_dir):
-    """Content-defined chunking dedup (the rsync/LBFS/FastCDC family):
-    a {_CDC_W}-byte polynomial rolling hash (base {_CDC_B}, mod 2²⁰)
-    slides over every document; positions where h ≡ 0 (mod {_CDC_MASK})
-    are cut points (expected {_CDC_MASK}-char chunks), the document tail
-    always closes a chunk. Because boundaries depend on CONTENT, a
-    shared passage chunks identically regardless of its byte offset —
-    the property that lets a 100 TB store dedupe shifted copies, which
-    fixed-width shingles (dedup_ngram_jaccard) structurally can't.
-    Output: the top-20 cross-document duplicated chunks plus corpus
-    totals and the dedupable ratio. Fully distributed in BOTH engines —
-    position explode, window lag per doc, one chunk-hash aggregate; the
-    hash is the identical integer term expansion, no float anywhere."""
-    d = _t(spark, sf_dir, "documents")
-    pos = (d.select("doc_id", "text",
-                    F.explode(F.expr(
-                        f"sequence({_CDC_W},"
-                        f" greatest(length(text), {_CDC_W}))"))
-                    .alias("i"))
-           .filter(F.col("i") <= F.length("text"))
-           .select("doc_id", "text", "i",
-                   F.expr(f"({_cdc_hash_terms('text', 'i')})"
-                          f" % {_CDC_M}").alias("h")))
-    cuts = (pos.filter(F.col("h") % _CDC_MASK == 0)
-            .select("doc_id", "text", F.col("i").alias("cut"))
-            .unionByName(d.select("doc_id", "text",
-                                  F.length("text").cast("long")
-                                  .alias("cut")))
-            .distinct())
-    w = Window.partitionBy("doc_id").orderBy("cut")
-    spans = cuts.select(
-        "doc_id", "text",
-        (F.coalesce(F.lag("cut").over(w), F.lit(0)) + 1).alias("s"),
-        F.col("cut").alias("e"))
-    chunks = (spans.filter(F.col("e") >= F.col("s"))
-              .select("doc_id",
-                      F.md5(F.expr("substr(text, CAST(s AS INT),"
-                                   " CAST(e - s + 1 AS INT))"))
-                      .alias("cmd5"),
-                      (F.col("e") - F.col("s") + 1).alias("clen")))
-    tot = chunks.agg(F.count(F.lit(1)).cast("long").alias("n_chunks"),
-                     F.countDistinct("cmd5").cast("long")
-                     .alias("n_distinct"))
-    return (chunks.groupBy("cmd5")
-            .agg(F.max("clen").cast("long").alias("chunk_len"),
-                 F.count(F.lit(1)).cast("long").alias("n_occurrences"))
-            .filter(F.col("n_occurrences") >= 2)
-            .crossJoin(F.broadcast(tot))
-            .orderBy(F.desc("n_occurrences"), F.asc("cmd5")).limit(20)
-            .select(F.col("cmd5").alias("chunk_md5"), "chunk_len",
-                    "n_occurrences", "n_chunks", "n_distinct",
-                    F.expr("CAST((n_chunks - n_distinct) * 1000000"
-                           " div n_chunks AS BIGINT)")
-                    .alias("dup_ratio_e6")))
-
-
-def _pnm_ascii_fixture_sql(n: int = 27, seed: int = 42) -> str:
-    """Oracle for the ASCII netpbm walk: expected channel means recompute
-    from the pure (x, y, id) pixel formulas — a comment-skip slip, a
-    P1 polarity flip (1 = BLACK) or a missed maxval rescale (v·255//15)
-    flips the hash."""
-    rows = []
-    for i in range(n):
-        w = 9 + (i * 5 + seed) % 11
-        h = 7 + (i * 3 + seed) % 9
-        kind = 1 + i % 3
-        maxval = 15 if i % 2 == 0 else 255
-        rs = gs = bs = 0
-        for y in range(h):
-            for x in range(w):
-                if kind == 1:
-                    v = (1 - (x + y + i) % 2) * 255
-                    rs += v; gs += v; bs += v
-                elif kind == 2:
-                    v = ((x * 5 + y * 9 + i * 3) % (maxval + 1)) \
-                        * 255 // maxval
-                    rs += v; gs += v; bs += v
-                else:
-                    rs += ((x * 2 + y * 13 + i) % (maxval + 1)) \
-                        * 255 // maxval
-                    gs += ((x * 11 + y * 3 + i * 5) % (maxval + 1)) \
-                        * 255 // maxval
-                    bs += ((x + y * 7 + i * 9) % (maxval + 1)) \
-                        * 255 // maxval
-        npx = w * h
-        rows.append(f"({i}, {w}, {h}, {rs / npx!r}, {gs / npx!r},"
-                    f" {bs / npx!r})")
-    return (f"SELECT CAST(media_id AS BIGINT) AS media_id,"
-            f" CAST(width AS INTEGER) AS width,"
-            f" CAST(height AS INTEGER) AS height,"
-            f" CAST(r_mean AS DOUBLE) AS r_mean,"
-            f" CAST(g_mean AS DOUBLE) AS g_mean,"
-            f" CAST(b_mean AS DOUBLE) AS b_mean"
-            f" FROM (VALUES {', '.join(rows)})"
-            f" t(media_id, width, height, r_mean, g_mean, b_mean)")
-
-
-@register("multimodal_pnm_ascii_features", _pnm_ascii_fixture_sql())
-def multimodal_pnm_ascii_features(spark, sf_dir):
-    """ASCII netpbm decode (P1 bitmap / P2 graymap / P3 pixmap) via the
-    HAND-ROLLED whitespace tokenizer with spec-correct '#'-comment
-    skipping between ANY tokens, P1's inverted polarity (1 = black), and
-    exact v·255//maxval rescaling (maxval 15 and 255 fixtures both
-    exercised) — the human-editable end of the netpbm family next to the
-    binary P6/P7 paths, wired through the same decode_image dispatch and
-    mapInPandas feature scan."""
-    from .sources.multimodal import (
-        extract_image_features_real,
-        synthetic_pnm_ascii_media,
-    )
-    return extract_image_features_real(synthetic_pnm_ascii_media(spark, 27)) \
-        .select("media_id", "width", "height",
-                "r_mean", "g_mean", "b_mean")
-
-
-_MATCH_SQL_TPL = """
-WITH RECURSIVE m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {lex}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e0 AS (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY 1, 2 HAVING count(*) >= 330
-), er AS (
-  SELECT a, b, row_number() OVER (ORDER BY a, b) AS rn FROM e0
-), nmax AS (SELECT max(rn) AS n FROM er),
-st AS (
-  SELECT 0 AS rn, CAST([] AS VARCHAR[]) AS cov,
-         0 AS n_matched
-  UNION ALL
-  SELECT s.rn + 1,
-         CASE WHEN list_contains(s.cov, e.a)
-                   OR list_contains(s.cov, e.b)
-              THEN s.cov
-              ELSE list_sort(list_concat(s.cov, [e.a, e.b])) END,
-         s.n_matched + CASE WHEN list_contains(s.cov, e.a)
-                                 OR list_contains(s.cov, e.b)
-                            THEN 0 ELSE 1 END
-  FROM st s JOIN er e ON e.rn = s.rn + 1
-), fin AS (
-  SELECT cov, n_matched FROM st WHERE rn = (SELECT n FROM nmax)
-)
-SELECT CAST(f.n_matched AS BIGINT) AS matching_size,
-       CAST(len(f.cov) AS BIGINT) AS cover_size,
-       list_aggregate(f.cov, 'string_agg', ',') AS cover_csv
-FROM fin f
-"""
-
-
-@register("kg_vertex_cover_docs",
-          _MATCH_SQL_TPL.format(lex=kg_docs.lexicon_values_sql()))
-def kg_vertex_cover_docs(spark, sf_dir):
-    """Greedy maximal matching in lexicographic edge order over the
-    sparsified co-occurrence graph, and the classic 2-approximation
-    VERTEX COVER it induces (both matched endpoints) — the
-    approximation-algorithm counterpart of kg_mis_docs (its complement
-    bound: V − MIS is an exact cover, matching×2 bounds it within 2× of
-    OPT). Maximal matching is inherently sequential in the chosen edge
-    order, so the engine replays the bounded vocabulary-projected edge
-    list driver-side (the _scc_driver precedent) against the oracle's
-    rank-join recursion carrying the covered-vertex list."""
-    edges = sorted((r["term_a"], r["term_b"])
-                   for r in _cooc_edges(spark, sf_dir, 330)
-                   .select("term_a", "term_b").collect())
-    cov: set = set()
-    matched = 0
-    for a, b in edges:
-        if a not in cov and b not in cov:
-            cov.update((a, b))
-            matched += 1
-    side = sorted(cov)
-    return spark.createDataFrame(
-        [(matched, len(side), ",".join(side))],
-        "matching_size long, cover_size long, cover_csv string")
-
-
-_LTM_SQL_TPL = """
-WITH RECURSIVE m AS (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {lex}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e0 AS (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY 1, 2 HAVING count(*) >= 330
-), adj AS (
-  SELECT DISTINCT node, nbr FROM (
-    SELECT a AS node, b AS nbr FROM e0
-    UNION ALL SELECT b, a FROM e0) u
-), deg AS (SELECT node, count(*) AS k FROM adj GROUP BY 1),
-seeds AS (
-  SELECT list(node ORDER BY node) AS s0 FROM (
-    SELECT node FROM deg ORDER BY k DESC, node LIMIT 2) q
-), st AS (
-  SELECT 0 AS round, (SELECT s0 FROM seeds) AS active
-  UNION ALL
-  SELECT s.round + 1,
-         list_sort(list_distinct(list_concat(s.active, nw.newly)))
-  FROM st s, LATERAL (
-    SELECT coalesce(list(x.node ORDER BY x.node), CAST([] AS VARCHAR[]))
-        AS newly
-    FROM (
-      SELECT a.node, count(*) AS c
-      FROM adj a
-      WHERE list_contains(s.active, a.nbr)
-        AND NOT list_contains(s.active, a.node)
-      GROUP BY a.node
-    ) x JOIN deg d2 ON d2.node = x.node
-    WHERE 2 * x.c >= d2.k
-  ) nw
-  WHERE s.round < 20 AND len(nw.newly) > 0
-)
-SELECT CAST(round AS INTEGER) AS round,
-       CAST(len(active) AS BIGINT) AS n_active,
-       list_aggregate(active, 'string_agg', ',') AS active_csv
-FROM st
-"""
-
-
-@register("kg_ltm_cascade_docs",
-          _LTM_SQL_TPL.format(lex=kg_docs.lexicon_values_sql()))
-def kg_ltm_cascade_docs(spark, sf_dir):
-    """Linear-threshold influence cascade (Kempe-Kleinberg-Tardos 2003,
-    the deterministic uniform-½-threshold case) on the co-occurrence
-    graph: seed the two highest-degree terms (ties lexicographic), then
-    each round every inactive node with ≥ half its neighbors active
-    activates, to the fixpoint — the influence-maximization primitive
-    next to the bass diffusion FIT and the attack-robustness REMOVALS
-    (spread instead of decay). Synchronous rounds are exactly
-    expressible distributed: each engine round is one adjacency join +
-    threshold aggregate + union (frontier fixpoint, the _reach_closure
-    shape); the oracle carries the active list through a recursion with
-    a LATERAL threshold aggregate. Output: the activation curve with
-    memberships."""
-    from .operators.graph_algos import undirected
-    edges = _cooc_edges(spark, sf_dir, 330).select(
-        F.col("term_a").alias("subj"), F.col("term_b").alias("obj"))
-    adj = undirected(edges, "subj", "obj").distinct() \
-        .localCheckpoint(eager=True)
-    deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("k"))
-    seeds = (deg.orderBy(F.desc("k"), F.asc("src")).limit(2)
-             .select(F.col("src").alias("v")))
-    active = seeds.localCheckpoint(eager=True)
-    out = []
-
-    def snap(rnd):
-        vs = sorted(r["v"] for r in active.collect())
-        out.append((rnd, len(vs), ",".join(vs)))
-
-    snap(0)
-    for rnd in range(1, 21):
-        cand = (adj.join(active.select(F.col("v").alias("dst")), "dst")
-                .groupBy("src").agg(F.count(F.lit(1)).alias("c"))
-                .join(active.select(F.col("v").alias("src")), "src",
-                      "left_anti")
-                .join(deg, "src")
-                .filter(2 * F.col("c") >= F.col("k"))
-                .select(F.col("src").alias("v")))
-        cand = cand.localCheckpoint(eager=True)
-        if cand.isEmpty():
-            break
-        active = active.unionByName(cand).localCheckpoint(eager=True)
-        snap(rnd)
-    return spark.createDataFrame(
-        out, "round int, n_active long, active_csv string")
-
-
-_DOMSET_SQL_TPL = """
-WITH RECURSIVE m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {lex}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e0 AS (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY 1, 2 HAVING count(*) >= 330
-), nbhd AS MATERIALIZED (
-  SELECT node, list_sort(list_distinct(list_append(list(nbr), node)))
-      AS cls
-  FROM (
-    SELECT a AS node, b AS nbr FROM e0
-    UNION ALL SELECT b, a FROM e0) u
-  GROUP BY node
-), st AS (
-  SELECT 0 AS step, CAST(NULL AS VARCHAR) AS picked,
-         CAST(0 AS BIGINT) AS gain, CAST([] AS VARCHAR[]) AS covered
-  UNION ALL
-  SELECT s.step + 1,
-         arg_min(n.node,
-           lpad(CAST(1000000 - len(list_filter(n.cls,
-                w -> NOT list_contains(s.covered, w))) AS VARCHAR),
-                7, '0') || n.node),
-         max(CAST(len(list_filter(n.cls,
-                w -> NOT list_contains(s.covered, w))) AS BIGINT)),
-         list_sort(list_distinct(list_concat(s.covered,
-           arg_min(n.cls,
-             lpad(CAST(1000000 - len(list_filter(n.cls,
-                  w -> NOT list_contains(s.covered, w))) AS VARCHAR),
-                  7, '0') || n.node))))
-  FROM st s, nbhd n
-  WHERE s.step < 15
-  GROUP BY s.step, s.covered
-  HAVING max(len(list_filter(n.cls,
-                 w -> NOT list_contains(s.covered, w)))) > 0
-)
-SELECT CAST(step AS INTEGER) AS step, picked,
-       CAST(gain AS BIGINT) AS gain,
-       CAST(len(covered) AS BIGINT) AS covered_total
-FROM st WHERE step >= 1
-"""
-
-
-@register("kg_dominating_set_docs",
-          _DOMSET_SQL_TPL.format(lex=kg_docs.lexicon_values_sql()))
-def kg_dominating_set_docs(spark, sf_dir):
-    """Greedy minimum dominating set (ln-n approximation) on the
-    sparsified co-occurrence graph: each step picks the vertex whose
-    CLOSED neighborhood covers the most still-undominated vertices — the
-    landmark/monitor-placement primitive (where to put probes so every
-    concept is one hop away) next to kg_vertex_cover's edge guarantee
-    and data_greedy_coverage's set-system form. Ties break to the
-    lexicographically-first term via a zero-padded (10⁶ − gain) ∥ term
-    string key — a total order, so arg_min is deterministic. Engine: distributed
-    marginal-gain rounds over the neighborhood table with one argmax per
-    round; oracle: the proven arg_max recursion."""
-    from .operators.graph_algos import undirected
-    edges = _cooc_edges(spark, sf_dir, 330).select(
-        F.col("term_a").alias("subj"), F.col("term_b").alias("obj"))
-    und = undirected(edges, "subj", "obj").distinct()
-    nbhd = (und.groupBy(F.col("src").alias("node"))
-            .agg(F.expr("sort_array(array_distinct("
-                        "array_append(collect_list(dst), node)))")
-                 .alias("cls")).persist())
-    covered: list = []
-    out = []
-    for step in range(1, 16):
-        lit_cov = F.array(*[F.lit(w) for w in covered]) if covered \
-            else F.array().cast("array<string>")
-        cand = (nbhd.select(
-            "node",
-            F.size(F.array_except("cls", lit_cov)).cast("long")
-            .alias("gain"),
-            F.array_except("cls", lit_cov).alias("nw"))
-            .orderBy(F.desc("gain"), F.asc("node"))
-            .limit(1).collect()[0])
-        if int(cand["gain"]) <= 0:
-            break
-        covered = sorted(set(covered) | set(cand["nw"]))
-        out.append((step, cand["node"], int(cand["gain"]), len(covered)))
-    return spark.createDataFrame(
-        out, "step int, picked string, gain long, covered_total long")
-
-
-_TOPSIS_SQL = """
-WITH c AS (
-  SELECT event_type,
-         CAST(count(*) AS HUGEINT) AS vol,
-         CAST(count(DISTINCT user_id) AS HUGEINT) AS reach,
-         CAST(sum(CAST(floor(value * 100) AS HUGEINT)) AS HUGEINT)
-             AS val_c
-  FROM events GROUP BY 1
-), nrm AS (
-  SELECT event_type,
-         CAST(floor(CAST(vol AS DOUBLE) * 1000000
-              / sqrt(CAST((SELECT sum(vol * vol) FROM c) AS DOUBLE)))
-              AS BIGINT) AS n1,
-         CAST(floor(CAST(reach AS DOUBLE) * 1000000
-              / sqrt(CAST((SELECT sum(reach * reach) FROM c) AS DOUBLE)))
-              AS BIGINT) AS n2,
-         CAST(floor(CAST(val_c AS DOUBLE) * 1000000
-              / sqrt(CAST((SELECT sum(val_c * val_c) FROM c) AS DOUBLE)))
-              AS BIGINT) AS n3
-  FROM c
-), ideal AS (
-  SELECT max(n1) AS b1, max(n2) AS b2, max(n3) AS b3,
-         min(n1) AS w1, min(n2) AS w2, min(n3) AS w3
-  FROM nrm
-), d AS (
-  SELECT n.event_type, n.n1, n.n2, n.n3,
-         CAST(floor(sqrt(CAST((i.b1 - n.n1) * (i.b1 - n.n1)
-                              + (i.b2 - n.n2) * (i.b2 - n.n2)
-                              + (i.b3 - n.n3) * (i.b3 - n.n3)
-                              AS DOUBLE))) AS BIGINT) AS dplus,
-         CAST(floor(sqrt(CAST((n.n1 - i.w1) * (n.n1 - i.w1)
-                              + (n.n2 - i.w2) * (n.n2 - i.w2)
-                              + (n.n3 - i.w3) * (n.n3 - i.w3)
-                              AS DOUBLE))) AS BIGINT) AS dminus
-  FROM nrm n, ideal i
-)
-SELECT event_type, n1 AS norm_vol_e6, n2 AS norm_reach_e6,
-       n3 AS norm_value_e6, dplus, dminus,
-       CAST(CASE WHEN dplus + dminus = 0 THEN NULL
-                 ELSE dminus * 1000000 // (dplus + dminus) END AS BIGINT)
-           AS topsis_e6
-FROM d
-"""
-
-
-@register("q_events_topsis_ranking", _TOPSIS_SQL)
-def q_events_topsis_ranking(spark, sf_dir):
-    """TOPSIS multi-criteria ranking of event types (Hwang-Yoon 1981) on
-    three benefit criteria — volume, user reach, total value-cents:
-    vector-normalized scores (one sqrt per criterion over exact integer
-    sums, e6-floored per cell — the MI/JSD identical-expression
-    discipline), Euclidean distances to the ideal and anti-ideal points
-    (one floored sqrt each, computed from the ALREADY-floored integers so
-    both engines square identical values), closeness D⁻/(D⁺+D⁻) as one
-    integer division. The decision-analysis lens next to q_parts_skyline
-    (which finds the undominated set but won't rank it). One contingency
-    aggregate, a 6-cell ideal row broadcast back."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    c = (e.groupBy("event_type")
-         .agg(F.count(F.lit(1)).cast(dec).alias("vol"),
-              F.countDistinct("user_id").cast(dec).alias("reach"),
-              F.sum(F.expr("CAST(floor(value * 100) AS DECIMAL(38,0))"))
-              .alias("val_c")))
-    sq = c.agg(F.sum(F.expr("vol * vol")).alias("sv"),
-               F.sum(F.expr("reach * reach")).alias("sr"),
-               F.sum(F.expr("val_c * val_c")).alias("sc"))
-    nrm = (c.crossJoin(F.broadcast(sq))
-           .select("event_type",
-                   F.expr("CAST(floor(CAST(vol AS DOUBLE) * 1000000"
-                          " / sqrt(CAST(sv AS DOUBLE))) AS BIGINT)")
-                   .alias("n1"),
-                   F.expr("CAST(floor(CAST(reach AS DOUBLE) * 1000000"
-                          " / sqrt(CAST(sr AS DOUBLE))) AS BIGINT)")
-                   .alias("n2"),
-                   F.expr("CAST(floor(CAST(val_c AS DOUBLE) * 1000000"
-                          " / sqrt(CAST(sc AS DOUBLE))) AS BIGINT)")
-                   .alias("n3")))
-    ideal = nrm.agg(F.max("n1").alias("b1"), F.max("n2").alias("b2"),
-                    F.max("n3").alias("b3"), F.min("n1").alias("w1"),
-                    F.min("n2").alias("w2"), F.min("n3").alias("w3"))
-    d = (nrm.crossJoin(F.broadcast(ideal))
-         .select("event_type", "n1", "n2", "n3",
-                 F.expr("CAST(floor(sqrt(CAST((b1 - n1) * (b1 - n1)"
-                        " + (b2 - n2) * (b2 - n2)"
-                        " + (b3 - n3) * (b3 - n3) AS DOUBLE)))"
-                        " AS BIGINT)").alias("dplus"),
-                 F.expr("CAST(floor(sqrt(CAST((n1 - w1) * (n1 - w1)"
-                        " + (n2 - w2) * (n2 - w2)"
-                        " + (n3 - w3) * (n3 - w3) AS DOUBLE)))"
-                        " AS BIGINT)").alias("dminus")))
-    return d.select(
-        "event_type", F.col("n1").alias("norm_vol_e6"),
-        F.col("n2").alias("norm_reach_e6"),
-        F.col("n3").alias("norm_value_e6"), "dplus", "dminus",
-        F.expr("CAST(CASE WHEN dplus + dminus = 0 THEN NULL"
-               " ELSE dminus * 1000000 div (dplus + dminus) END"
-               " AS BIGINT)").alias("topsis_e6"))
-
-
-def _huffman_depths(freqs: list) -> list:
-    """Huffman code lengths by the merge loop shared between
-    text_huffman_lengths and text_canonical_huffman: repeatedly merge
-    the two lightest nodes, ties broken by smallest member symbol index
-    (unique per node — member sets are disjoint — so the merge order is
-    a total order). Returns per-symbol depths in input order."""
-    V = len(freqs)
-    fs = list(freqs)
-    ks = list(range(1, V + 1))
-    mss = [[i] for i in range(1, V + 1)]
-    depths = [0] * V
-    while len(fs) > 1:
-        keys = [f * 1000000000 + k for f, k in zip(fs, ks)]
-        p1 = keys.index(min(keys))
-        keys2 = keys[:]
-        keys2[p1] = 1 << 63
-        p2 = keys2.index(min(keys2))
-        a, b = sorted((p1, p2))
-        m1, m2 = mss[a], mss[b]
-        for i in m1 + m2:
-            depths[i - 1] += 1
-        nf, nk, nm = fs[a] + fs[b], min(ks[a], ks[b]), sorted(m1 + m2)
-        for p in (b, a):
-            del fs[p], ks[p], mss[p]
-        fs.append(nf)
-        ks.append(nk)
-        mss.append(nm)
-    return depths
-
-
-_HUFF_CORE = """
-WITH RECURSIVE wc AS (
-  SELECT w, CAST(count(*) AS HUGEINT) AS c FROM (
-    SELECT unnest(string_split(text, ' ')) AS w FROM documents) u
-  WHERE w <> '' GROUP BY 1
-), voc AS (
-  SELECT w, c, CAST(row_number() OVER (ORDER BY w) AS BIGINT) AS i
-  FROM wc
-), vv AS (
-  SELECT (SELECT CAST(count(*) AS BIGINT) FROM voc) AS nv,
-         (SELECT list(c ORDER BY i) FROM voc) AS fr
-), st AS (
-  SELECT CAST(1 AS BIGINT) AS it,
-         vv.fr AS fs,
-         list_transform(range(1, vv.nv + 1), i -> i) AS ks,
-         list_transform(range(1, vv.nv + 1), i -> [i]) AS mss,
-         list_transform(range(1, vv.nv + 1),
-                        i -> CAST(0 AS BIGINT)) AS depths,
-         vv.nv AS nv
-  FROM vv
-  UNION ALL
-  SELECT s.it + 1,
-         list_append(list_transform(
-           list_filter(range(1, len(s.fs) + 1),
-                       p -> p <> q.p1 AND p <> q.p2),
-           p -> s.fs[p]),
-           s.fs[q.p1] + s.fs[q.p2]),
-         list_append(list_transform(
-           list_filter(range(1, len(s.fs) + 1),
-                       p -> p <> q.p1 AND p <> q.p2),
-           p -> s.ks[p]),
-           least(s.ks[q.p1], s.ks[q.p2])),
-         list_append(list_transform(
-           list_filter(range(1, len(s.fs) + 1),
-                       p -> p <> q.p1 AND p <> q.p2),
-           p -> s.mss[p]),
-           list_sort(list_concat(s.mss[q.p1], s.mss[q.p2]))),
-         list_transform(range(1, s.nv + 1),
-           i -> s.depths[i]
-                + CASE WHEN list_contains(s.mss[q.p1], i)
-                            OR list_contains(s.mss[q.p2], i)
-                       THEN 1 ELSE 0 END),
-         s.nv
-  FROM st s, LATERAL (
-    SELECT list_position(kl, list_min(kl)) AS p1,
-           list_position(kl2, list_min(kl2)) AS p2
-    FROM (SELECT list_transform(range(1, len(s.fs) + 1),
-                   p -> s.fs[p] * 1000000000 + s.ks[p]) AS kl) a,
-    LATERAL (SELECT list_transform(range(1, len(kl) + 1),
-                   p -> CASE WHEN p = list_position(kl, list_min(kl))
-                             THEN CAST(9223372036854775807 AS HUGEINT)
-                             ELSE kl[p] END) AS kl2) b
-  ) q
-  WHERE len(s.fs) > 1
-), fin AS (
-  SELECT depths FROM st WHERE it = (SELECT nv FROM vv)
-)"""
-
-_HUFF_SQL = _HUFF_CORE + """, mx AS (
-  SELECT max(f.depths[v.i]) AS maxlen FROM voc v, fin f
-), tot AS (
-  SELECT sum(v.c * f.depths[v.i]) AS total_bits,
-         sum(CAST(1 AS HUGEINT)
-             << CAST(mx.maxlen - f.depths[v.i] AS INTEGER)) AS kr
-  FROM voc v, fin f, mx
-)
-SELECT v.w AS word, CAST(v.c AS BIGINT) AS freq,
-       CAST(f.depths[v.i] AS INTEGER) AS code_len,
-       CAST(t.total_bits AS BIGINT) AS total_bits,
-       CAST(CASE WHEN t.kr = (CAST(1 AS HUGEINT)
-                              << CAST(mx.maxlen AS INTEGER))
-                 THEN 1 ELSE 0 END AS INTEGER) AS kraft_ok
-FROM voc v, fin f, tot t, mx
-"""
-
-
-@register("text_huffman_lengths", _HUFF_SQL)
-def text_huffman_lengths(spark, sf_dir):
-    """Optimal prefix-code construction: HUFFMAN code lengths over the
-    corpus word frequencies (merge the two lightest nodes, ties broken by
-    the smallest member symbol index — unique per node since member sets
-    are disjoint, so the merge order is a total order), the achievable
-    integer-length bound that text_token_entropy lower-bounds. Output:
-    per-word code length, the total encoded size, and the exact Kraft
-    equality check Σ2^(L−lᵢ) = 2^L (a full binary tree — any slip in the
-    merge order breaks it). The oracle replays all V−1 merges through a
-    list-state recursion (frequencies / tie-keys / member-sets / depths
-    as four parallel lists); the engine builds the same tree driver-side
-    over the vocabulary-bounded count table (the BPE-merge discipline)
-    after one distributed word count."""
-    d = _t(spark, sf_dir, "documents")
-    wc = (d.select(F.explode(F.split("text", " ")).alias("w"))
-          .filter(F.col("w") != "")
-          .groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("c"))
-          .orderBy("w").collect())
-    words = [r["w"] for r in wc]
-    freqs = [int(r["c"]) for r in wc]
-    V = len(words)
-    depths = _huffman_depths(freqs)
-    total_bits = sum(c * d_ for c, d_ in zip(freqs, depths))
-    maxlen = max(depths)
-    kr = sum(1 << (maxlen - d_) for d_ in depths)
-    kraft_ok = 1 if kr == (1 << maxlen) else 0
-    out = [(words[i], freqs[i], depths[i], total_bits, kraft_ok)
-           for i in range(V)]
-    return spark.createDataFrame(
-        out, "word string, freq long, code_len int, total_bits long,"
-             " kraft_ok int")
-
-
-_KCENTER_K = 6
-
-_KCENTER_SQL = f"""
-WITH RECURSIVE e AS (
-  SELECT vec_id AS vid, embedding::DOUBLE[] AS v FROM embeddings
-), st AS (
-  SELECT 1 AS round,
-         [(SELECT min(vid) FROM e)] AS centers,
-         CAST(NULL AS BIGINT) AS last_rad
-  UNION ALL
-  SELECT s.round + 1, list_append(s.centers, q.pick), q.rad
-  FROM st s, LATERAL (
-    SELECT arg_max(t.id, t.dmin * 10000000000 - t.id) AS pick,
-           max(t.dmin) AS rad
-    FROM (
-      SELECT p.vid AS id,
-             min(1000000 - CAST(floor(
-               list_dot_product(p.v, c.v)
-               / (sqrt(list_dot_product(p.v, p.v))
-                  * sqrt(list_dot_product(c.v, c.v))) * 1000000)
-               AS BIGINT)) AS dmin
-      FROM e p JOIN e c ON list_contains(s.centers, c.vid)
-      WHERE NOT list_contains(s.centers, p.vid)
-      GROUP BY p.vid
-    ) t
-  ) q
-  WHERE s.round < {_KCENTER_K}
-)
-SELECT CAST(round AS INTEGER) AS round,
-       CAST(centers[round] AS BIGINT) AS center_id,
-       last_rad AS radius_e6
-FROM st
-"""
-
-
-@register("ann_kcenter_gonzalez", _KCENTER_SQL)
-def ann_kcenter_gonzalez(spark, sf_dir):
-    """Gonzalez farthest-first traversal (1985, the 2-approximation for
-    k-center) over the embedding corpus with cosine distance: seed the
-    smallest vec_id, then each round add the point FARTHEST from its
-    nearest chosen center (ties to the smallest id; distances e6-FLOORED
-    once from the identical IEEE cosine both engines compute) — the
-    diversity-coreset primitive next to ann_mmr_topk's per-query
-    diversity and ann_kmeans' mean-seeking centers (k-center bounds the
-    worst case, k-means the average). Reported radius = the covering
-    radius just before each center was added, i.e. a shrinking upper
-    bound on the optimal k-center cost. Engine: one distributed
-    min-distance scan + argmax per round (centers broadcast); oracle:
-    the same rounds through a LATERAL aggregate recursion."""
-    from .functions.vectors import cosine
-    embs = _t(spark, sf_dir, "embeddings")
-    v = embs.select(F.col("vec_id").alias("id"),
-                    F.col("embedding").cast("array<double>").alias("v")) \
-        .persist()
-    seed = v.agg(F.min("id")).collect()[0][0]
-    centers = [int(seed)]
-    out = [(1, centers[0], None)]
-    for rnd in range(2, _KCENTER_K + 1):
-        cdf = F.broadcast(v.filter(F.col("id").isin(centers))
-                          .select(F.col("id").alias("cid"),
-                                  F.col("v").alias("cv")))
-        pick = (v.filter(~F.col("id").isin(centers))
-                .crossJoin(cdf)
-                .select("id",
-                        (F.lit(1000000)
-                         - F.floor(cosine(F.col("v"), F.col("cv"))
-                                   * 1000000).cast("long")).alias("d"))
-                .groupBy("id").agg(F.min("d").alias("dmin"))
-                .orderBy(F.desc("dmin"), F.asc("id")).limit(1)
-                .collect()[0])
-        centers.append(int(pick["id"]))
-        out.append((rnd, int(pick["id"]), int(pick["dmin"])))
-    return spark.createDataFrame(
-        out, "round int, center_id long, radius_e6 long")
-
-
-_GS_N = 8   # proposers (customers) and acceptors (nations)
-
-_GS_SQL = f"""
-WITH RECURSIVE cs AS (
-  SELECT c_custkey, row_number() OVER (ORDER BY c_custkey) AS ci
-  FROM customer ORDER BY c_custkey LIMIT {_GS_N}
-), ns AS (
-  SELECT n_nationkey, row_number() OVER (ORDER BY n_nationkey) AS ni
-  FROM nation ORDER BY n_nationkey LIMIT {_GS_N}
-), prefc AS (
-  SELECT c.ci, n.ni,
-         row_number() OVER (PARTITION BY c.ci ORDER BY
-           CAST(concat('0x', substr(md5('gs:c:' || c.c_custkey || ':'
-                || n.n_nationkey), 1, 16)) AS UBIGINT), n.ni) AS rk
-  FROM cs c, ns n
-), prefn AS (
-  SELECT n.ni, c.ci,
-         row_number() OVER (PARTITION BY n.ni ORDER BY
-           CAST(concat('0x', substr(md5('gs:n:' || n.n_nationkey || ':'
-                || c.c_custkey), 1, 16)) AS UBIGINT), c.ci) AS rk
-  FROM cs c, ns n
-), pl AS (
-  SELECT (SELECT list(l ORDER BY ci) FROM (
-            SELECT ci, list(ni ORDER BY rk) AS l FROM prefc GROUP BY ci) q)
-      AS pc,
-         (SELECT list(l ORDER BY ni) FROM (
-            SELECT ni, list(rk ORDER BY ci) AS l FROM prefn GROUP BY ni) q)
-      AS rn
-), st AS (
-  -- Two-phase replay: a phase-0 row is a committed matching state; the
-  -- step from phase 0 stamps the proposal (tgt, acc) from that state
-  -- alone (phase-1 row); the step from phase 1 applies it.  Splitting
-  -- the proposal into its own recursion step avoids both DuckDB
-  -- landmines hit while building this oracle: same-SELECT alias reuse
-  -- inside a LATERAL subquery does not bind under WITH RECURSIVE, and
-  -- lambdas cannot capture LATERAL columns — here every lambda only
-  -- references s.* columns of the previous row.
-  SELECT 0 AS it, 0 AS phase, 0 AS tgt, false AS acc,
-         list_transform(range(1, 8 + 1), i -> 0) AS mc,
-         list_transform(range(1, 8 + 1), i -> 0) AS mn,
-         list_transform(range(1, 8 + 1),
-                        i -> CAST(1 AS BIGINT)) AS nx,
-         CAST(1 AS BIGINT) AS ff
-  UNION ALL
-  SELECT s.it + 1,
-         1 - s.phase AS phase2,
-         CASE WHEN s.phase = 0 THEN
-           CAST(pl.pc[CAST(s.ff AS INTEGER)]
-                     [CAST(s.nx[CAST(s.ff AS INTEGER)] AS INTEGER)]
-                AS INTEGER)
-         ELSE 0 END AS tgt2,
-         CASE WHEN s.phase = 0 THEN
-           (s.mn[tgt2] = 0
-            OR pl.rn[tgt2][CAST(s.ff AS INTEGER)]
-               < pl.rn[tgt2][CAST(s.mn[tgt2] AS INTEGER)])
-         ELSE false END AS acc2,
-         CASE WHEN s.phase = 0 THEN s.mc ELSE
-           list_transform(range(1, 8 + 1), i -> CASE
-             WHEN i = s.ff THEN (CASE WHEN s.acc THEN s.tgt ELSE 0 END)
-             WHEN s.acc AND s.mn[s.tgt] = i THEN 0
-             ELSE s.mc[i] END) END AS mc2,
-         CASE WHEN s.phase = 0 THEN s.mn ELSE
-           list_transform(range(1, 8 + 1), i -> CASE
-             WHEN i = s.tgt AND s.acc THEN CAST(s.ff AS INTEGER)
-             ELSE s.mn[i] END) END AS mn2,
-         CASE WHEN s.phase = 0 THEN s.nx ELSE
-           list_transform(range(1, 8 + 1), i -> CASE
-             WHEN i = s.ff THEN s.nx[i] + 1 ELSE s.nx[i] END)
-         END AS nx2,
-         CASE WHEN s.phase = 0 THEN s.ff ELSE
-           CAST(list_position(
-             list_transform(range(1, 8 + 1), i -> CASE
-               WHEN (CASE
-                       WHEN i = s.ff
-                         THEN (CASE WHEN s.acc THEN s.tgt ELSE 0 END)
-                       WHEN s.acc AND s.mn[s.tgt] = i THEN 0
-                       ELSE s.mc[i] END) = 0
-                    AND (s.nx[i] + CASE WHEN i = s.ff THEN 1 ELSE 0 END)
-                        <= 8
-               THEN 1 ELSE 0 END), 1) AS BIGINT)
-         END AS ff2
-  FROM st s, pl
-  WHERE (s.phase = 1 OR s.ff IS NOT NULL) AND s.it < 2 * 8 * 8 + 2
-), fin AS (
-  SELECT mc FROM st WHERE phase = 0 ORDER BY it DESC LIMIT 1
-), pairs AS (
-  SELECT c.c_custkey, n.n_nationkey, c.ci, n.ni
-  FROM fin f, cs c JOIN ns n
-    ON n.ni = CAST(f.mc[CAST(c.ci AS INTEGER)] AS BIGINT)
-), blocking AS (
-  SELECT count(*) AS nb
-  FROM prefc x JOIN pairs pm ON pm.ci = x.ci
-  JOIN prefc xm ON xm.ci = x.ci AND xm.ni = pm.ni
-  JOIN prefn y ON y.ni = x.ni AND y.ci = x.ci
-  JOIN pairs pn ON pn.ni = x.ni
-  JOIN prefn yn ON yn.ni = x.ni AND yn.ci = pn.ci
-  WHERE x.rk < xm.rk AND y.rk < yn.rk
-)
-SELECT p.c_custkey, p.n_nationkey,
-       CAST(xc.rk AS INTEGER) AS customer_rank_of_match,
-       CAST(xn.rk AS INTEGER) AS nation_rank_of_match,
-       CAST(b.nb AS BIGINT) AS blocking_pairs
-FROM pairs p
-JOIN prefc xc ON xc.ci = p.ci AND xc.ni = p.ni
-JOIN prefn xn ON xn.ni = p.ni AND xn.ci = p.ci
-CROSS JOIN blocking b
-"""
-
-
-@register("q_stable_matching_gs", _GS_SQL)
-def q_stable_matching_gs(spark, sf_dir):
-    """Gale-Shapley stable matching (1962): the first {_GS_N} customers
-    propose to the first {_GS_N} nations under md5-derived preference
-    orders (the engine-portable u64 hash, ties by index) — the
-    matching-market primitive (assignment under two-sided preferences,
-    e.g. query routing to replicas with affinities). One proposal per
-    iteration, lowest-index free proposer first; the proposer-optimal
-    result is famously INDEPENDENT of proposal order, and the oracle
-    re-verifies stability structurally: the blocking_pairs column counts
-    (c, n) where both prefer each other to their matches — pinned 0 by
-    the hash. Engine: driver replay over the two collected {_GS_N}×
-    {_GS_N} preference tables (bounded pools, the Viterbi discipline);
-    oracle: a three-list state recursion with one LATERAL proposal
-    step."""
-    import hashlib as _h
-
-    def u64(sx):
-        return int.from_bytes(_h.md5(sx.encode()).digest()[:8], "big")
-
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    cks = [int(r["c_custkey"]) for r in
-           c.select("c_custkey").orderBy("c_custkey").limit(_GS_N)
-           .collect()]
-    nks = [int(r["n_nationkey"]) for r in
-           n.select("n_nationkey").orderBy("n_nationkey").limit(_GS_N)
-           .collect()]
-    K = _GS_N
-    pc = [sorted(range(1, K + 1),
-                 key=lambda ni: (u64(f"gs:c:{cks[ci - 1]}:{nks[ni - 1]}"),
-                                 ni))
-          for ci in range(1, K + 1)]
-    rn = [[0] * (K + 1) for _ in range(K + 1)]
-    for ni in range(1, K + 1):
-        order = sorted(range(1, K + 1),
-                       key=lambda ci: (u64(f"gs:n:{nks[ni - 1]}:"
-                                           f"{cks[ci - 1]}"), ci))
-        for rk, ci in enumerate(order, start=1):
-            rn[ni][ci] = rk
-    mc = [0] * (K + 1)
-    mn = [0] * (K + 1)
-    nx = [1] * (K + 1)
-    while True:
-        free = next((i for i in range(1, K + 1)
-                     if mc[i] == 0 and nx[i] <= K), None)
-        if free is None:
-            break
-        tgt = pc[free - 1][nx[free] - 1]
-        nx[free] += 1
-        holder = mn[tgt]
-        if holder == 0 or rn[tgt][free] < rn[tgt][holder]:
-            if holder:
-                mc[holder] = 0
-            mc[free], mn[tgt] = tgt, free
-    crank = {ci: pc[ci - 1].index(mc[ci]) + 1 for ci in range(1, K + 1)}
-    out = [(cks[ci - 1], nks[mc[ci] - 1], crank[ci], rn[mc[ci]][ci], 0)
-           for ci in range(1, K + 1)]
-    return spark.createDataFrame(
-        out, "c_custkey long, n_nationkey long,"
-             " customer_rank_of_match int, nation_rank_of_match int,"
-             " blocking_pairs long")
-
-
-_PERMENT_SQL = """
-WITH b AS (
-  SELECT date_trunc('hour', ts) AS hr, CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1
-), spine AS (
-  SELECT unnest(generate_series((SELECT min(hr) FROM b),
-                                (SELECT max(hr) FROM b),
-                                INTERVAL 1 HOUR)) AS hr
-), s AS (
-  SELECT coalesce(b.c, 0) AS x,
-         row_number() OVER (ORDER BY spine.hr) AS rn
-  FROM spine LEFT JOIN b ON b.hr = spine.hr
-), w AS (
-  SELECT x AS x1, lead(x, 1) OVER (ORDER BY rn) AS x2,
-         lead(x, 2) OVER (ORDER BY rn) AS x3
-  FROM s
-), pat AS (
-  SELECT CASE
-    WHEN x1 <= x2 AND x2 <= x3 THEN '123'
-    WHEN x1 <= x2 AND x2 > x3 AND x1 <= x3 THEN '132'
-    WHEN x1 <= x2 AND x2 > x3 AND x1 > x3 THEN '312'
-    WHEN x1 > x2 AND x2 <= x3 AND x1 <= x3 THEN '213'
-    WHEN x1 > x2 AND x2 <= x3 AND x1 > x3 THEN '231'
-    ELSE '321' END AS pattern
-  FROM w WHERE x3 IS NOT NULL
-), c AS (
-  SELECT pattern, CAST(count(*) AS BIGINT) AS cnt FROM pat GROUP BY 1
-), gg AS (
-  SELECT CAST(sum(cnt) AS BIGINT) AS nw,
-         -sum((CAST(cnt AS DOUBLE) / (SELECT sum(cnt) FROM c))
-              * ln(CAST(cnt AS DOUBLE) / (SELECT sum(cnt) FROM c))) AS h
-  FROM c
-)
-SELECT pattern, cnt,
-       CAST(cnt * 1000000 // gg.nw AS BIGINT) AS p_e6,
-       round(-(CAST(cnt AS DOUBLE) / gg.nw)
-             * ln(CAST(cnt AS DOUBLE) / gg.nw), 6) AS h_contrib_nats,
-       round(gg.h / ln(6), 6) AS pe_normalized
-FROM c, gg
-"""
-
-
-@register("q_events_permutation_entropy", _PERMENT_SQL)
-def q_events_permutation_entropy(spark, sf_dir):
-    """Bandt-Pompe permutation entropy (2002) of the zero-filled hourly
-    event-count series: each length-3 window maps to one of six ordinal
-    patterns under the total key (value, position) — ties go to the
-    earlier hour, so the mapping is deterministic for the heavily tied
-    small-count hours — and the pattern distribution's Shannon entropy
-    (normalized by ln 3!) measures series complexity vs regularity.
-    Window extraction and pattern counts are exact integers on both
-    engines; only the final ≤6-term log sum is float (round-6, the
-    q_events_entropy_rate discipline)."""
-    e = _t(spark, sf_dir, "events")
-    b = (e.groupBy(F.date_trunc("hour", "ts").alias("hr"))
-         .agg(F.count(F.lit(1)).cast("long").alias("c")))
-    lim = b.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-    spine = (lim.select(F.explode(F.sequence(
-        "lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("hr")))
-    s = (spine.join(b, "hr", "left")
-         .select("hr", F.coalesce("c", F.lit(0)).alias("x")))
-    w = Window.orderBy("hr")
-    t = (s.select(F.col("x").alias("x1"),
-                  F.lead("x", 1).over(w).alias("x2"),
-                  F.lead("x", 2).over(w).alias("x3"))
-         .filter(F.col("x3").isNotNull()))
-    pat = t.select(F.expr("""CASE
-        WHEN x1 <= x2 AND x2 <= x3 THEN '123'
-        WHEN x1 <= x2 AND x2 > x3 AND x1 <= x3 THEN '132'
-        WHEN x1 <= x2 AND x2 > x3 AND x1 > x3 THEN '312'
-        WHEN x1 > x2 AND x2 <= x3 AND x1 <= x3 THEN '213'
-        WHEN x1 > x2 AND x2 <= x3 AND x1 > x3 THEN '231'
-        ELSE '321' END""").alias("pattern"))
-    c = pat.groupBy("pattern").agg(F.count(F.lit(1)).cast("long")
-                                   .alias("cnt"))
-    p = F.col("cnt").cast("double") / F.col("nw")
-    tot = c.agg(F.sum("cnt").cast("long").alias("nw"))
-    g = (c.crossJoin(F.broadcast(tot))
-         .agg(F.first("nw").alias("nw"),
-              (-F.sum(p * F.log(p))).alias("h")))
-    return (c.crossJoin(F.broadcast(g))
-            .select("pattern", "cnt",
-                    F.expr("CAST(cnt * 1000000 div nw AS BIGINT)")
-                    .alias("p_e6"),
-                    F.round(-p * F.log(p), 6).alias("h_contrib_nats"),
-                    F.round(F.col("h") / math.log(6.0), 6)
-                    .alias("pe_normalized")))
-
-
-_SAMPEN_SQL = """
-WITH b AS (
-  SELECT date_trunc('hour', ts) AS hr, CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1
-), spine AS (
-  SELECT unnest(generate_series((SELECT min(hr) FROM b),
-                                (SELECT max(hr) FROM b),
-                                INTERVAL 1 HOUR)) AS hr
-), s AS (
-  SELECT CAST(coalesce(b.c, 0) AS HUGEINT) AS x,
-         row_number() OVER (ORDER BY spine.hr) AS rn
-  FROM spine LEFT JOIN b ON b.hr = spine.hr
-), g AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS t,
-         sum(x * x) AS sq
-  FROM s
-), w AS (
-  SELECT rn, x AS x1, lead(x, 1) OVER (ORDER BY rn) AS x2,
-         lead(x, 2) OVER (ORDER BY rn) AS x3
-  FROM s
-), tpl AS (
-  SELECT rn, x1, x2, x3 FROM w WHERE x3 IS NOT NULL
-), m AS (
-  SELECT
-    CAST(sum(CASE WHEN
-      25 * g.n * g.n * (a.x1 - b.x1) * (a.x1 - b.x1)
-        <= g.n * g.sq - g.t * g.t
-      AND 25 * g.n * g.n * (a.x2 - b.x2) * (a.x2 - b.x2)
-        <= g.n * g.sq - g.t * g.t
-      THEN 1 ELSE 0 END) AS BIGINT) AS b_match,
-    CAST(sum(CASE WHEN
-      25 * g.n * g.n * (a.x1 - b.x1) * (a.x1 - b.x1)
-        <= g.n * g.sq - g.t * g.t
-      AND 25 * g.n * g.n * (a.x2 - b.x2) * (a.x2 - b.x2)
-        <= g.n * g.sq - g.t * g.t
-      AND 25 * g.n * g.n * (a.x3 - b.x3) * (a.x3 - b.x3)
-        <= g.n * g.sq - g.t * g.t
-      THEN 1 ELSE 0 END) AS BIGINT) AS a_match,
-    CAST(count(*) AS BIGINT) AS pairs
-  FROM tpl a JOIN tpl b ON a.rn < b.rn, g
-  GROUP BY g.n
-)
-SELECT CAST((SELECT n FROM g) AS BIGINT) AS n_points,
-       pairs, b_match, a_match,
-       CASE WHEN a_match > 0 AND b_match > 0
-            THEN round(ln(CAST(b_match AS DOUBLE) / a_match), 6)
-       END AS sampen_nats
-FROM m
-"""
-
-
-@register("q_events_sample_entropy", _SAMPEN_SQL)
-def q_events_sample_entropy(spark, sf_dir):
-    """Sample entropy (Richman-Moorman 2000, m=2, r=0.2·σ) of the
-    zero-filled hourly event-count series — the regularity statistic of
-    physiological-signal analysis, here measuring how repetitive the
-    traffic shape is. The Chebyshev tolerance test |Δ| ≤ 0.2·σ is
-    cleared of ALL floats by cross-multiplication: 25·n²·Δ² ≤ n·Σx²−(Σx)²
-    compares exact integers, so template-match counts A and B are
-    bit-identical on both engines; SampEn = ln(B/A) is the only float
-    (round-6). Self-matches excluded via the strict i<j pair join."""
-    e = _t(spark, sf_dir, "events")
-    b = (e.groupBy(F.date_trunc("hour", "ts").alias("hr"))
-         .agg(F.count(F.lit(1)).cast("long").alias("c")))
-    lim = b.agg(F.min("hr").alias("lo"), F.max("hr").alias("hi"))
-    spine = (lim.select(F.explode(F.sequence(
-        "lo", "hi", F.expr("INTERVAL 1 HOUR"))).alias("hr")))
-    s = (spine.join(b, "hr", "left")
-         .select("hr", F.coalesce("c", F.lit(0)).cast("decimal(38,0)")
-                 .alias("x")))
-    w = Window.orderBy("hr")
-    s = s.select(F.row_number().over(w).alias("rn"), "x")
-    g = s.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
-              F.sum("x").cast("decimal(38,0)").alias("t"),
-              F.sum(F.col("x") * F.col("x")).cast("decimal(38,0)")
-              .alias("sq"))
-    tpl = (s.select("rn", F.col("x").alias("x1"),
-                    F.lead("x", 1).over(Window.orderBy("rn")).alias("x2"),
-                    F.lead("x", 2).over(Window.orderBy("rn")).alias("x3"))
-           .filter(F.col("x3").isNotNull()))
-    a = tpl.alias("a")
-    bb = tpl.alias("b")
-    pairs = (a.join(bb, F.col("a.rn") < F.col("b.rn"))
-             .crossJoin(F.broadcast(g)))
-    dd = F.col("n") * F.col("sq") - F.col("t") * F.col("t")
-    n2 = F.lit(25).cast("decimal(38,0)") * F.col("n") * F.col("n")
-
-    def hit(ca, cb):
-        d = F.col(f"a.{ca}") - F.col(f"b.{cb}")
-        return n2 * d * d <= dd
-
-    m2 = hit("x1", "x1") & hit("x2", "x2")
-    m3 = m2 & hit("x3", "x3")
-    m = pairs.agg(
-        F.sum(F.when(m2, 1).otherwise(0)).cast("long").alias("b_match"),
-        F.sum(F.when(m3, 1).otherwise(0)).cast("long").alias("a_match"),
-        F.count(F.lit(1)).cast("long").alias("pairs"))
-    return (m.crossJoin(F.broadcast(g))
-            .select(F.col("n").cast("long").alias("n_points"),
-                    "pairs", "b_match", "a_match",
-                    F.when((F.col("a_match") > 0) & (F.col("b_match") > 0),
-                           F.round(F.log(F.col("b_match")
-                                         .cast("double")
-                                         / F.col("a_match")), 6))
-                    .alias("sampen_nats")))
 
 
 _BIPARTITE_SQL = f"""
@@ -30291,1782 +7216,6 @@ def kg_salsa_docs(spark, sf_dir):
     return salsa_scores(de, src="src", dst="dst")
 
 
-_SSTEM_SQL = """
-WITH w AS (
-  SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
-  FROM documents
-), base AS (
-  SELECT tok AS root, count(*) AS c FROM w
-  WHERE regexp_full_match(tok, '[a-z]+') GROUP BY 1
-), t AS (
-  SELECT root || sfx AS tok, c
-  FROM base, (SELECT unnest(['', 's', 'es', 'ies', 'ss', 'us', 'oes',
-                             'ees', 'aes', 'eies', 'aies']) AS sfx)
-), s AS (
-  SELECT tok, c,
-    CASE
-      WHEN length(tok) > 3 AND tok LIKE '%ies'
-           AND tok NOT LIKE '%eies' AND tok NOT LIKE '%aies'
-        THEN substr(tok, 1, length(tok) - 3) || 'y'
-      WHEN length(tok) > 3 AND tok LIKE '%es'
-           AND tok NOT LIKE '%aes' AND tok NOT LIKE '%ees'
-           AND tok NOT LIKE '%oes'
-        THEN substr(tok, 1, length(tok) - 1)
-      WHEN length(tok) > 3 AND tok LIKE '%s'
-           AND tok NOT LIKE '%us' AND tok NOT LIKE '%ss'
-        THEN substr(tok, 1, length(tok) - 1)
-      ELSE tok END AS stem
-  FROM t
-)
-SELECT stem, CAST(count(*) AS BIGINT) AS n_variants,
-       CAST(sum(c) AS BIGINT) AS total_count,
-       array_to_string(list(tok ORDER BY tok), ',') AS variants
-FROM s GROUP BY stem HAVING count(*) >= 2
-"""
-
-
-@register("text_s_stemmer", _SSTEM_SQL)
-def text_s_stemmer(spark, sf_dir):
-    """Harman S-stemmer (1991, "How effective is suffixing?") — the
-    classic minimal English stemmer: exactly one of three guarded rules
-    fires per word (ies→y unless -eies/-aies; -es drops s unless
-    -aes/-ees/-oes; -s drops unless -us/-ss; words ≤3 chars untouched).
-    The synthetic corpus vocabulary carries no natural inflections, so
-    each root is expanded with a pinned 11-suffix morphological probe
-    battery ('', s, es, ies, ss, us, oes, ees, aes, eies, aies) that
-    exercises EVERY rule and every guard exception; the emitted
-    conflation classes (≥2 surface variants, probe forms weighted by
-    the root's corpus count) pin which forms the stemmer merges and
-    which the guards protect. Stemming is vocabulary-sized map-side
-    CASE work, never token-stream-sized; bit-identical across
-    engines."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"))
-    base = (toks.filter(F.col("tok").rlike("^[a-z]+$"))
-            .groupBy(F.col("tok").alias("root"))
-            .agg(F.count(F.lit(1)).alias("c")))
-    sfx = ["", "s", "es", "ies", "ss", "us", "oes", "ees", "aes",
-           "eies", "aies"]
-    t = (base.select(F.explode(F.array(*[
-        F.concat(F.col("root"), F.lit(x)) for x in sfx])).alias("tok"),
-        "c"))
-    stem = F.expr("""CASE
-      WHEN length(tok) > 3 AND tok LIKE '%ies'
-           AND tok NOT LIKE '%eies' AND tok NOT LIKE '%aies'
-        THEN concat(substr(tok, 1, length(tok) - 3), 'y')
-      WHEN length(tok) > 3 AND tok LIKE '%es'
-           AND tok NOT LIKE '%aes' AND tok NOT LIKE '%ees'
-           AND tok NOT LIKE '%oes'
-        THEN substr(tok, 1, length(tok) - 1)
-      WHEN length(tok) > 3 AND tok LIKE '%s'
-           AND tok NOT LIKE '%us' AND tok NOT LIKE '%ss'
-        THEN substr(tok, 1, length(tok) - 1)
-      ELSE tok END""")
-    return (t.withColumn("stem", stem)
-            .groupBy("stem")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_variants"),
-                 F.sum("c").cast("long").alias("total_count"),
-                 F.array_join(F.array_sort(F.collect_list("tok")), ",")
-                 .alias("variants"))
-            .filter(F.col("n_variants") >= 2))
-
-
-_BWT_SQL = """
-WITH d AS (
-  SELECT regexp_replace(lower(substr(text, 1, 200)), '[^a-z ]', '', 'g')
-         || '!' AS s
-  FROM documents ORDER BY doc_id LIMIT 1
-), idx AS (
-  SELECT unnest(range(1, length((SELECT s FROM d)) + 1)) AS i
-), rot AS (
-  SELECT CAST(i AS INTEGER) AS start_idx,
-         substr(d.s, CAST(i AS INTEGER))
-           || substr(d.s, 1, CAST(i AS INTEGER) - 1) AS r,
-         d.s AS s
-  FROM idx, d
-), ranked AS (
-  SELECT CAST(row_number() OVER (ORDER BY r) AS INTEGER) AS rank,
-         start_idx, substr(r, length(s), 1) AS ch
-  FROM rot
-)
-SELECT rank, start_idx, ch,
-       coalesce(ch <> lag(ch) OVER (ORDER BY rank), TRUE) AS is_run_start
-FROM ranked
-"""
-
-
-@register("text_bwt_runs", _BWT_SQL)
-def text_bwt_runs(spark, sf_dir):
-    """Burrows-Wheeler transform (1994) of the first document's cleaned
-    200-char prefix (sentinel '!' appended, so all rotations are
-    distinct and the sort is a strict total order): the full sorted
-    rotation table — output rank, rotation start index (the suffix-array
-    permutation), last-column character, and run-start flags whose count
-    is the BWT run complexity r, the compressibility statistic modern
-    text indexes (r-index, bzip2) are built on. The rotation sort is
-    pure binary string comparison over an [a-z space!] alphabet,
-    collation-proof on both engines; the engine builds rotations
-    distributively from spark.range over the broadcast prefix."""
-    docs = _t(spark, sf_dir, "documents")
-    s = (docs.orderBy("doc_id").limit(1)
-         .select((F.concat(F.regexp_replace(
-             F.lower(F.substring("text", 1, 200)), "[^a-z ]", ""),
-             F.lit("!"))).alias("s")))
-    rot = (spark.range(1, 202).select((F.col("id")).cast("int")
-                                      .alias("start_idx"))
-           .crossJoin(F.broadcast(s))
-           .filter(F.col("start_idx") <= F.length("s"))
-           .select("start_idx", "s",
-                   F.concat(F.expr("substr(s, start_idx)"),
-                            F.expr("substr(s, 1, start_idx - 1)"))
-                   .alias("r")))
-    ranked = rot.select(
-        F.row_number().over(Window.orderBy("r")).cast("int").alias("rank"),
-        "start_idx", F.expr("substr(r, length(s), 1)").alias("ch"))
-    w = Window.orderBy("rank")
-    return ranked.select(
-        "rank", "start_idx", "ch",
-        F.coalesce(F.col("ch") != F.lag("ch").over(w), F.lit(True))
-        .alias("is_run_start"))
-
-
-def _protobuf_fixture_sql(n: int = 40, seed: int = 42) -> str:
-    """Oracle for the protobuf wire-format walk: every manifest column is
-    re-derived from the pure message_spec formulas — a varint continuation
-    slip, a ZigZag sign mixup, a packed-run misparse, a nested-message
-    boundary error or a wrong unknown-field skip flips the hash. The one
-    exception is payload_bytes, which comes from the writer (the writer
-    itself is pinned to spec-known byte encodings by
-    tests/test_protobuf.py golden vectors, so writer/reader bugs cannot
-    cancel)."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.protobuf import (
-        build_message,
-        message_spec,
-    )
-    rows = []
-    for i in range(n):
-        s = message_spec(i, seed)
-        tmd5 = _h.md5("|".join(s["tags"]).encode()).hexdigest()
-        n_unknown = 2 if s["extra_unk"] else 1
-        rows.append(
-            f"({i}, {s['rec_id']}, '{s['name']}', {s['score']},"
-            f" {s['flags']}, {s['meta_hour']}, '{s['meta_tag']}',"
-            f" {len(s['tags'])}, '{tmd5}', {sum(s['vals'])}, {s['big']},"
-            f" {n_unknown}, {len(build_message(i, seed))})")
-    return (
-        "SELECT CAST(msg_id AS BIGINT) AS msg_id,"
-        " CAST(rec_id AS BIGINT) AS rec_id, name,"
-        " CAST(score AS BIGINT) AS score, CAST(flags AS BIGINT) AS flags,"
-        " CAST(meta_hour AS INTEGER) AS meta_hour, meta_tag,"
-        " CAST(n_tags AS INTEGER) AS n_tags, tags_md5,"
-        " CAST(vals_sum AS BIGINT) AS vals_sum, CAST(big AS BIGINT) AS big,"
-        " CAST(n_unknown AS INTEGER) AS n_unknown,"
-        " CAST(payload_bytes AS INTEGER) AS payload_bytes"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(msg_id, rec_id, name, score, flags, meta_hour, meta_tag,"
-        " n_tags, tags_md5, vals_sum, big, n_unknown, payload_bytes)")
-
-
-@register("multimodal_protobuf_records", _protobuf_fixture_sql())
-def multimodal_protobuf_records(spark, sf_dir):
-    """Protocol-Buffers wire-format record manifest via the HAND-ROLLED
-    tag-driven walk (sources/protobuf.message_manifest): base-128
-    varints, key = (field << 3) | wire_type, wire types 0/1/2/5, ZigZag
-    sint decode, packed repeated varints, one nested-message level, and
-    the spec-MANDATED unknown-field skip (fields 14/15 carry data the
-    reader has no schema for — it must hop by wire type and count them).
-    Odd messages serialize fields in REVERSE order, so the reader is
-    proven order-blind. This is the RPC/log-shipping ingestion surface
-    (protobuf-framed telemetry is a dominant training-log container):
-    one mapInPandas over the binary column, no driver involvement."""
-    from .sources.protobuf import message_manifest, synthetic_messages
-    return message_manifest(synthetic_messages(spark, 40))
-
-
-def _avro_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the Avro OCF walk: all columns re-derived from the pure
-    avro_file_spec formulas (block count from the writer's fixed 8-record
-    blocking — ceil(n/8) is a pure formula too). Golden vectors in
-    tests/test_avrofile.py pin the writer's encodings."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.avrofile import (
-        avro_file_spec,
-    )
-    rows = []
-    for i in range(n):
-        recs = avro_file_spec(i, seed)
-        labels = "|".join(lb for _, lb, _ in recs)
-        rows.append(
-            f"({i}, 'null', 3, 'amount,label,active',"
-            f" {(len(recs) + 7) // 8}, {len(recs)},"
-            f" {sum(a for a, _, _ in recs)},"
-            f" '{_h.md5(labels.encode()).hexdigest()}',"
-            f" {sum(1 for _, _, act in recs if act)}, TRUE)")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id, codec,"
-        " CAST(n_fields AS INTEGER) AS n_fields, field_names,"
-        " CAST(n_blocks AS INTEGER) AS n_blocks,"
-        " CAST(n_records AS BIGINT) AS n_records,"
-        " CAST(sum_amount AS BIGINT) AS sum_amount, names_md5,"
-        " CAST(n_active AS BIGINT) AS n_active, sync_ok"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, codec, n_fields, field_names, n_blocks, n_records,"
-        " sum_amount, names_md5, n_active, sync_ok)")
-
-
-@register("multimodal_avro_blocks", _avro_fixture_sql())
-def multimodal_avro_blocks(spark, sf_dir):
-    """Avro Object-Container-File manifest via the HAND-ROLLED OCF walk
-    (sources/avrofile.avro_manifest): `Obj\\x01` magic, the
-    count-prefixed file-metadata map, ZigZag-varint longs,
-    length-prefixed strings, multi-block record runs with per-block
-    byte-length verification and sync-marker checks. The reader is
-    SCHEMA-DRIVEN — it decodes by walking the avro.schema JSON embedded
-    in the file header, never a hardcoded layout — and refuses unknown
-    codecs/primitives honestly. This is the data-lake landing-format
-    surface next to Parquet: one mapInPandas over the binary column,
-    fully distributed."""
-    from .sources.avrofile import avro_manifest, synthetic_avro_files
-    return avro_manifest(synthetic_avro_files(spark, 30))
-
-
-# Elo expected-score lookup: E6[b+32] = floor(1e6 / (1 + 10^(b*25/400)))
-# for rating-difference bucket b = clamp((R_opp − R_self) // 25 pts, ±32).
-# Transcendental math happens ONCE here; both engines replay with pure
-# integers against the same injected table (the circadian trig-table
-# discipline).
-_ELO_E6 = [math.floor(1_000_000 / (1 + 10 ** ((b * 25) / 400)))
-           for b in range(-32, 33)]
-_ELO_LIST = "[" + ", ".join(str(v) for v in _ELO_E6) + "]"
-
-_ELO_SQL = f"""
-WITH RECURSIVE ty AS (
-  SELECT event_type AS t,
-         CAST(row_number() OVER (ORDER BY event_type) AS INTEGER) AS ti
-  FROM (SELECT DISTINCT event_type FROM events)
-), days AS (
-  SELECT DISTINCT CAST(ts AS DATE) AS day FROM events
-), cn AS (
-  SELECT CAST(ts AS DATE) AS day, event_type AS t, count(*) AS c
-  FROM events GROUP BY 1, 2
-), grid AS (
-  SELECT d.day, ty.t, ty.ti, coalesce(cn.c, 0) AS c
-  FROM days d CROSS JOIN ty
-  LEFT JOIN cn ON cn.day = d.day AND cn.t = ty.t
-), mt AS MATERIALIZED (
-  SELECT a.ti AS ia, b.ti AS ib,
-         CASE WHEN a.c > b.c THEN 1000000
-              WHEN a.c < b.c THEN 0 ELSE 500000 END AS sa,
-         CAST(row_number() OVER (ORDER BY a.day, a.t, b.t) AS BIGINT)
-             AS rn
-  FROM grid a JOIN grid b ON a.day = b.day AND a.t < b.t
-), nm AS (SELECT max(rn) AS n FROM mt),
-st AS (
-  SELECT CAST(0 AS BIGINT) AS it, 0 AS phase, CAST(1 AS BIGINT) AS mi,
-         0 AS ia, 0 AS ib, CAST(0 AS BIGINT) AS da,
-         CAST(0 AS BIGINT) AS db,
-         list_transform(range(1, 6),
-                        i -> CAST(1500000000 AS BIGINT)) AS r
-  UNION ALL
-  SELECT s.it + 1,
-         1 - s.phase AS phase2,
-         CASE WHEN s.phase = 0 THEN s.mi ELSE s.mi + 1 END AS mi2,
-         CASE WHEN s.phase = 0 THEN m.ia ELSE 0 END AS ia2,
-         CASE WHEN s.phase = 0 THEN m.ib ELSE 0 END AS ib2,
-         CASE WHEN s.phase = 0 THEN
-           32 * (m.sa - ({_ELO_LIST})[CAST(
-             greatest(least((s.r[m.ib] - s.r[m.ia] + 1000000000000)
-                            // 25000000 - 40000, 32), -32)
-             + 33 AS INTEGER)])
-         ELSE CAST(0 AS BIGINT) END AS da2,
-         CASE WHEN s.phase = 0 THEN
-           32 * ((1000000 - m.sa) - ({_ELO_LIST})[CAST(
-             greatest(least((s.r[m.ia] - s.r[m.ib] + 1000000000000)
-                            // 25000000 - 40000, 32), -32)
-             + 33 AS INTEGER)])
-         ELSE CAST(0 AS BIGINT) END AS db2,
-         CASE WHEN s.phase = 0 THEN s.r ELSE
-           list_transform(range(1, 6), i -> CASE
-             WHEN i = s.ia THEN s.r[i] + s.da
-             WHEN i = s.ib THEN s.r[i] + s.db
-             ELSE s.r[i] END) END AS r2
-  FROM st s JOIN mt m ON m.rn = s.mi
-  WHERE s.it < 2 * (SELECT n FROM nm) + 2
-), fin AS (
-  SELECT r FROM st WHERE phase = 0 ORDER BY it DESC LIMIT 1
-), rec AS (
-  SELECT ty.ti, ty.t,
-    CAST(sum(CASE WHEN (mt.ia = ty.ti AND mt.sa = 1000000)
-                    OR (mt.ib = ty.ti AND mt.sa = 0)
-             THEN 1 ELSE 0 END) AS BIGINT) AS n_wins,
-    CAST(sum(CASE WHEN (mt.ia = ty.ti AND mt.sa = 0)
-                    OR (mt.ib = ty.ti AND mt.sa = 1000000)
-             THEN 1 ELSE 0 END) AS BIGINT) AS n_losses,
-    CAST(sum(CASE WHEN (mt.ia = ty.ti OR mt.ib = ty.ti)
-                   AND mt.sa = 500000
-             THEN 1 ELSE 0 END) AS BIGINT) AS n_draws
-  FROM ty JOIN mt ON mt.ia = ty.ti OR mt.ib = ty.ti
-  GROUP BY ty.ti, ty.t
-)
-SELECT rec.t AS event_type, CAST(f.r[rec.ti] AS BIGINT) AS rating_e6,
-       rec.n_wins, rec.n_losses, rec.n_draws
-FROM rec, fin f
-"""
-
-
-@register("q_events_elo_ratings", _ELO_SQL)
-def q_events_elo_ratings(spark, sf_dir):
-    """Elo rating replay (Elo 1978) over the daily event-type tournament:
-    each day, every type pair plays one match decided by that day's
-    event counts (win / loss / draw), replayed in (day, pair) order with
-    K=32. The transcendental expected score lives in a 65-entry injected
-    integer table E6[bucket] (bucket = 25-point rating-difference steps,
-    clamped ±800), so the entire replay is exact integer arithmetic in
-    e6 fixed point on both engines — the truncation-safe offset division
-    (diff + 10¹²) // 25e6 − 40000 makes DuckDB's truncating // equal to
-    Python's floor //. Engine: driver replay over the bounded
-    (days × pairs) match list (the Viterbi discipline); oracle: a
-    two-phase propose/apply list recursion."""
-    e = _t(spark, sf_dir, "events")
-    grid = (e.groupBy(F.to_date("ts").alias("day"),
-                      F.col("event_type").alias("t"))
-            .agg(F.count(F.lit(1)).alias("c")))
-    rows = grid.collect()
-    types = sorted({r["t"] for r in rows})
-    days = sorted({r["day"] for r in rows})
-    cnt = {(r["day"], r["t"]): r["c"] for r in rows}
-    ti = {t: i for i, t in enumerate(types)}
-    rating = [1_500_000_000] * len(types)
-    wins = [0] * len(types)
-    losses = [0] * len(types)
-    draws = [0] * len(types)
-    for day in days:
-        for a_i, ta in enumerate(types):
-            for tb in types[a_i + 1:]:
-                ca, cb = cnt.get((day, ta), 0), cnt.get((day, tb), 0)
-                sa = 1_000_000 if ca > cb else (0 if ca < cb else 500_000)
-                ia, ib = ti[ta], ti[tb]
-                ba = max(min((rating[ib] - rating[ia] + 10 ** 12)
-                             // 25_000_000 - 40_000, 32), -32)
-                bb = max(min((rating[ia] - rating[ib] + 10 ** 12)
-                             // 25_000_000 - 40_000, 32), -32)
-                da = 32 * (sa - _ELO_E6[ba + 32])
-                db = 32 * ((1_000_000 - sa) - _ELO_E6[bb + 32])
-                rating[ia] += da
-                rating[ib] += db
-                if sa == 1_000_000:
-                    wins[ia] += 1
-                    losses[ib] += 1
-                elif sa == 0:
-                    losses[ia] += 1
-                    wins[ib] += 1
-                else:
-                    draws[ia] += 1
-                    draws[ib] += 1
-    out = [(t, rating[ti[t]], wins[ti[t]], losses[ti[t]], draws[ti[t]])
-           for t in types]
-    return spark.createDataFrame(
-        out, "event_type string, rating_e6 long, n_wins long,"
-             " n_losses long, n_draws long")
-
-
-_AMS_SQL = """
-WITH w AS (
-  SELECT unnest(list_filter(string_split_regex(lower(trim(text)),
-                                               '\\s+'),
-                x -> x != '')) AS tok
-  FROM documents
-), cnt AS (
-  SELECT tok, CAST(count(*) AS BIGINT) AS c FROM w GROUP BY 1
-), js AS (SELECT CAST(unnest(range(0, 9)) AS INTEGER) AS j),
-x AS (
-  SELECT js.j,
-         CAST(sum(c * (CASE WHEN substr(md5('ams:' || js.j || ':' || tok),
-                                   16, 1)
-                            IN ('0','2','4','6','8','a','c','e')
-                       THEN 1 ELSE -1 END)) AS BIGINT) AS x_j
-  FROM cnt, js GROUP BY 1
-), est AS (
-  SELECT j, x_j, CAST(x_j * x_j AS BIGINT) AS est_f2 FROM x
-), gm AS (
-  SELECT j // 3 AS g, CAST(sum(est_f2) // 3 AS BIGINT) AS group_mean
-  FROM est GROUP BY 1
-), mm AS (
-  SELECT CAST(sum(group_mean) - max(group_mean) - min(group_mean)
-              AS BIGINT) AS mom
-  FROM gm
-), f2 AS (SELECT CAST(sum(c * c) AS BIGINT) AS f2 FROM cnt)
-SELECT est.j AS estimator, est.x_j, est.est_f2, gm.group_mean,
-       mm.mom AS mom_estimate, f2.f2 AS exact_f2,
-       CAST(abs(mm.mom - f2.f2) * 1000000 // f2.f2 AS BIGINT)
-           AS rel_err_e6
-FROM est JOIN gm ON gm.g = est.j // 3, mm, f2
-"""
-
-
-@register("sketch_ams_f2", _AMS_SQL)
-def sketch_ams_f2(spark, sf_dir):
-    """AMS second-frequency-moment sketch (Alon-Matias-Szegedy 1996, the
-    Gödel-prize streaming result): nine ±1-signed linear projections of
-    the token count vector (sign = md5 hex-digit parity, identical
-    expression on both engines), squared into F2 estimators, combined
-    median-of-3-means (the middle value = sum − max − min). F2 = Σc² is
-    the self-join size / collision mass a dedup planner needs before
-    committing to a shuffle. Every value is exact integer arithmetic —
-    the estimator X_j is one map-side combinable sum per sign function,
-    so the sketch costs 9 partial aggregates over the token stream and
-    never materializes the count vector; rel_err_e6 against the exact
-    F2 makes the estimator quality itself part of the pinned result."""
-    docs = _t(spark, sf_dir, "documents")
-    toks = docs.select(F.explode(F.filter(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+"),
-        lambda x: x != "")).alias("tok"))
-    cnt = toks.groupBy("tok").agg(F.count(F.lit(1)).cast("long")
-                                  .alias("c"))
-    js = spark.range(0, 9).select(F.col("id").cast("int").alias("j"))
-    sign = F.when(
-        F.substring(F.md5(F.concat(F.lit("ams:"), F.col("j"),
-                                   F.lit(":"), F.col("tok"))), 16, 1)
-        .isin("0", "2", "4", "6", "8", "a", "c", "e"), 1).otherwise(-1)
-    x = (cnt.crossJoin(F.broadcast(js))
-         .groupBy("j").agg(F.sum(F.col("c") * sign).cast("long")
-                           .alias("x_j")))
-    est = x.select("j", "x_j",
-                   (F.col("x_j") * F.col("x_j")).cast("long")
-                   .alias("est_f2"))
-    gm = (est.groupBy(F.expr("j div 3").alias("g"))
-          .agg(F.expr("CAST(sum(est_f2) div 3 AS BIGINT)")
-               .alias("group_mean")))
-    mm = gm.agg((F.sum("group_mean") - F.max("group_mean")
-                 - F.min("group_mean")).cast("long").alias("mom"))
-    f2 = cnt.agg(F.sum(F.col("c") * F.col("c")).cast("long").alias("f2"))
-    return (est.join(gm, F.expr("j div 3") == F.col("g"))
-            .crossJoin(F.broadcast(mm)).crossJoin(F.broadcast(f2))
-            .select(F.col("j").alias("estimator"), "x_j", "est_f2",
-                    "group_mean", F.col("mom").alias("mom_estimate"),
-                    F.col("f2").alias("exact_f2"),
-                    F.expr("CAST(abs(mom - f2) * 1000000 div f2"
-                           " AS BIGINT)").alias("rel_err_e6")))
-
-
-def _parquet_footer_fixture_sql(n: int = 24, seed: int = 42) -> str:
-    """Oracle for the hand-rolled parquet footer walk: row counts,
-    row-group splits (pinned by the explicit row_group_size=50) and the
-    int64 column's per-group min/max statistics are all re-derived from
-    the pure parquet_file_spec formulas — a thrift field-delta slip, a
-    zigzag mixup, a wrong list header or a misread statistics leaf flips
-    the hash. The format version (2) is pinned as the stable
-    parquet-format footer version."""
-    from knowledge_extraction_pipeline_spark.sources.parquetfooter import (
-        ROW_GROUP_SIZE,
-        parquet_file_spec,
-    )
-    rows = []
-    for i in range(n):
-        spec = parquet_file_spec(i, seed)
-        n_rg = (len(spec) + ROW_GROUP_SIZE - 1) // ROW_GROUP_SIZE
-        for g in range(n_rg):
-            chunk = spec[g * ROW_GROUP_SIZE:(g + 1) * ROW_GROUP_SIZE]
-            ks = [k for k, _ in chunk]
-            rows.append(f"({i}, 2, 'k,v', {len(spec)}, {n_rg}, {g},"
-                        f" {len(chunk)}, {len(chunk)}, {min(ks)},"
-                        f" {max(ks)})")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id,"
-        " CAST(n_leaf_cols AS INTEGER) AS n_leaf_cols, schema_cols,"
-        " CAST(total_rows AS BIGINT) AS total_rows,"
-        " CAST(n_row_groups AS INTEGER) AS n_row_groups,"
-        " CAST(rg_idx AS INTEGER) AS rg_idx,"
-        " CAST(rg_rows AS BIGINT) AS rg_rows,"
-        " CAST(k_num_values AS BIGINT) AS k_num_values,"
-        " CAST(rg_k_min AS BIGINT) AS rg_k_min,"
-        " CAST(rg_k_max AS BIGINT) AS rg_k_max"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, n_leaf_cols, schema_cols, total_rows, n_row_groups,"
-        " rg_idx, rg_rows, k_num_values, rg_k_min, rg_k_max)")
-
-
-@register("multimodal_parquet_footer", _parquet_footer_fixture_sql())
-def multimodal_parquet_footer(spark, sf_dir):
-    """Parquet footer manifest via the HAND-ROLLED Thrift-Compact-Protocol
-    walk (sources/parquetfooter.parquet_footer_manifest): the PAR1
-    magic + 4-byte footer length tail, then the FileMetaData struct tree
-    — short/long field headers with field-id deltas, ZigZag varints,
-    length-prefixed binaries, size<<4 list headers (0xF long form) — down
-    to the per-row-group int64 min/max Statistics leaves (8-byte
-    little-endian plain values). The bytes come from the REAL parquet
-    writer (pyarrow), so the reader faces independently-produced
-    metadata; pyarrow.parquet is never used for reading. This is the
-    metadata path every lake-table planner (row-group pruning, stats-
-    based skipping) depends on — reading it by hand pins the format
-    knowledge the engine's own scan pruning builds on. One mapInPandas
-    over the binary column, fully distributed. Schema names, row counts,
-    group splits and min/max stats are content-determined; byte offsets
-    and created_by are writer artifacts and excluded."""
-    from .sources.parquetfooter import (
-        parquet_footer_manifest,
-        synthetic_parquet_files,
-    )
-    return parquet_footer_manifest(synthetic_parquet_files(spark, 24))
-
-
-_CHOW_SQL = """
-WITH d AS (
-  SELECT CAST(row_number() OVER (ORDER BY day) AS HUGEINT) AS x,
-         CAST(c AS HUGEINT) AS y
-  FROM (SELECT CAST(ts AS DATE) AS day, count(*) AS c
-        FROM events GROUP BY 1)
-), n AS (SELECT CAST(count(*) AS HUGEINT) AS n FROM d),
-seg AS (
-  SELECT CASE WHEN x <= (SELECT n FROM n) // 2 THEN 1 ELSE 2 END AS s,
-         x, y
-  FROM d
-), fits AS (
-  SELECT s, CAST(count(*) AS HUGEINT) AS ns, sum(x) AS sx, sum(y) AS sy,
-         sum(x * x) AS sxx, sum(x * y) AS sxy
-  FROM seg GROUP BY s
-  UNION ALL
-  SELECT 0 AS s, CAST(count(*) AS HUGEINT), sum(x), sum(y),
-         sum(x * x), sum(x * y)
-  FROM d
-), cr AS (
-  SELECT s, ns, ns * sxx - sx * sx AS det,
-         ns * sxy - sx * sy AS slope_num,
-         sxx * sy - sx * sxy AS int_num
-  FROM fits
-), rss AS (
-  SELECT c.s,
-         sum((c.det * p.y - c.slope_num * p.x - c.int_num)
-             * (c.det * p.y - c.slope_num * p.x - c.int_num)) AS rss_sc,
-         max(c.det) AS det, max(c.slope_num) AS slope_num
-  FROM cr c JOIN seg p ON c.s = p.s OR c.s = 0
-  GROUP BY c.s
-), f AS (
-  SELECT
-    (SELECT CAST(rss_sc AS DOUBLE) / (CAST(det AS DOUBLE) ** 2)
-     FROM rss WHERE s = 0) AS rssp,
-    (SELECT CAST(rss_sc AS DOUBLE) / (CAST(det AS DOUBLE) ** 2)
-     FROM rss WHERE s = 1) AS rss1,
-    (SELECT CAST(rss_sc AS DOUBLE) / (CAST(det AS DOUBLE) ** 2)
-     FROM rss WHERE s = 2) AS rss2,
-    (SELECT CAST(n AS BIGINT) FROM n) AS nd
-)
-SELECT nd AS n_days, CAST(nd // 2 AS BIGINT) AS split_idx,
-       (SELECT CAST(slope_num * 1000000 // det AS BIGINT)
-        FROM rss WHERE s = 1) AS slope1_e6,
-       (SELECT CAST(slope_num * 1000000 // det AS BIGINT)
-        FROM rss WHERE s = 2) AS slope2_e6,
-       round(rssp, 6) AS rss_pooled, round(rss1, 6) AS rss_seg1,
-       round(rss2, 6) AS rss_seg2,
-       round(((rssp - rss1 - rss2) / 2)
-             / ((rss1 + rss2) / (nd - 4)), 6) AS chow_f
-FROM f
-"""
-
-
-@register("q_events_chow_test", _CHOW_SQL)
-def q_events_chow_test(spark, sf_dir):
-    """Chow structural-break test (Chow 1960) on the daily event-count
-    trend, split at the series midpoint: pooled vs per-segment OLS fits,
-    F = ((RSS_p − RSS₁ − RSS₂)/k) / ((RSS₁+RSS₂)/(n−2k)), k=2. Each
-    OLS fit is Cramer-exact (det, slope, intercept numerators are
-    integers) and each RSS is the exact integer
-    Σ(det·y − slope_num·x − int_num)² at det² scale — the
-    q_events_adf_test discipline — so the only floats are the three
-    final det² divisions and the F ratio (round-6). Slopes are also
-    pinned as e6 floor divisions."""
-    e = _t(spark, sf_dir, "events")
-    d = (e.groupBy(F.to_date("ts").alias("day"))
-         .agg(F.count(F.lit(1)).alias("c"))
-         .select(F.row_number().over(Window.orderBy("day"))
-                 .cast("decimal(38,0)").alias("x"),
-                 F.col("c").cast("decimal(38,0)").alias("y")))
-    n = d.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n"))
-    seg = (d.crossJoin(F.broadcast(n))
-           .select(F.when(F.col("x") <= F.expr("CAST(n div 2"
-                                               " AS DECIMAL(38,0))"), 1)
-                   .otherwise(2).alias("s"), "x", "y"))
-    base = seg.groupBy("s").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("ns"),
-        F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"))
-    pooled = seg.groupBy(F.lit(0).alias("s")).agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("ns"),
-        F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"))
-    cr = (base.unionByName(pooled)
-          .select("s", (F.col("ns") * F.col("sxx")
-                        - F.col("sx") * F.col("sx")).alias("det"),
-                  (F.col("ns") * F.col("sxy")
-                   - F.col("sx") * F.col("sy")).alias("slope_num"),
-                  (F.col("sxx") * F.col("sy")
-                   - F.col("sx") * F.col("sxy")).alias("int_num")))
-    r = (cr.alias("c")
-         .join(seg.alias("p"),
-               (F.col("c.s") == F.col("p.s")) | (F.col("c.s") == 0))
-         .groupBy("c.s")
-         .agg(F.sum((F.col("c.det") * F.col("p.y")
-                     - F.col("c.slope_num") * F.col("p.x")
-                     - F.col("c.int_num"))
-                    * (F.col("c.det") * F.col("p.y")
-                       - F.col("c.slope_num") * F.col("p.x")
-                       - F.col("c.int_num"))).alias("rss_sc"),
-              F.max("c.det").alias("det"),
-              F.max("c.slope_num").alias("slope_num")))
-    rssf = (F.col("rss_sc").cast("double")
-            / F.pow(F.col("det").cast("double"), 2))
-
-    def pick(s_val, col):
-        return F.first(F.when(F.col("s") == s_val, col), ignorenulls=True)
-
-    f = r.agg(pick(0, rssf).alias("rssp"), pick(1, rssf).alias("rss1"),
-              pick(2, rssf).alias("rss2"),
-              pick(1, F.expr("CAST(slope_num * 1000000 div det"
-                             " AS BIGINT)")).alias("slope1_e6"),
-              pick(2, F.expr("CAST(slope_num * 1000000 div det"
-                             " AS BIGINT)")).alias("slope2_e6"))
-    return (f.crossJoin(F.broadcast(n))
-            .select(F.col("n").cast("long").alias("n_days"),
-                    F.expr("CAST(n div 2 AS BIGINT)").alias("split_idx"),
-                    "slope1_e6", "slope2_e6",
-                    F.round("rssp", 6).alias("rss_pooled"),
-                    F.round("rss1", 6).alias("rss_seg1"),
-                    F.round("rss2", 6).alias("rss_seg2"),
-                    F.round(((F.col("rssp") - F.col("rss1")
-                              - F.col("rss2")) / 2)
-                            / ((F.col("rss1") + F.col("rss2"))
-                               / (F.col("n").cast("double") - 4)), 6)
-                    .alias("chow_f")))
-
-
-_EULER_SQL = f"""
-WITH RECURSIVE m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {{lex}}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 330
-), bd AS (
-  SELECT a AS node, b AS nbr FROM e UNION SELECT b, a FROM e
-), nodes AS (SELECT DISTINCT node FROM bd),
-rc(a, b) AS (
-  SELECT node, node FROM nodes
-  UNION
-  SELECT rc.a, bd.nbr FROM rc JOIN bd ON bd.node = rc.b
-), comp AS (
-  SELECT a AS node, min(b) AS component FROM rc GROUP BY 1
-), deg AS (
-  SELECT node, CAST(count(*) AS BIGINT) AS degree FROM bd GROUP BY 1
-), ec AS (
-  SELECT c.component, CAST(count(*) AS BIGINT) AS n_edges
-  FROM e JOIN comp c ON c.node = e.a GROUP BY 1
-)
-SELECT c.component,
-       CAST(count(*) AS BIGINT) AS n_nodes,
-       coalesce(max(ec.n_edges), 0) AS n_edges,
-       CAST(sum(CASE WHEN d.degree % 2 = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_odd_degree,
-       sum(CASE WHEN d.degree % 2 = 1 THEN 1 ELSE 0 END) = 0
-           AS has_euler_circuit,
-       sum(CASE WHEN d.degree % 2 = 1 THEN 1 ELSE 0 END) IN (0, 2)
-           AS has_euler_trail
-FROM comp c
-JOIN deg d ON d.node = c.node
-LEFT JOIN ec ON ec.component = c.component
-GROUP BY c.component
-""".format(lex=kg_docs.lexicon_values_sql())
-
-
-@register("kg_eulerian_docs", _EULER_SQL)
-def kg_eulerian_docs(spark, sf_dir):
-    """Eulerian trail/circuit census (Euler 1736, the Königsberg bridge
-    theorem — the first theorem of graph theory) per connected component
-    of the sparsified doc co-occurrence graph: a component has an Euler
-    circuit iff every degree is even, a trail iff 0 or 2 vertices are
-    odd. Degree parity comes from one distinct-neighbor aggregate;
-    components from the REAL large-star/small-star operator; the oracle
-    re-derives both with a min-label closure recursion. The odd-degree
-    census is the exact quantity route-inspection / edge-covering
-    pipelines (deduplicating crawl frontiers, wiring test coverage)
-    plan with."""
-    from .operators.canonicalize import connected_components
-    edges = (_cooc_edges(spark, sf_dir, 330)
-             .select(F.col("term_a").alias("src"),
-                     F.col("term_b").alias("dst")))
-    bd = (edges.unionByName(edges.select(F.col("dst").alias("src"),
-                                         F.col("src").alias("dst")))
-          .distinct())
-    comp = (connected_components(edges, driver_threshold=0)
-            .select(F.col("norm_term").alias("node"),
-                    F.col("canon").alias("component")))
-    deg = (bd.groupBy(F.col("src").alias("node"))
-           .agg(F.count(F.lit(1)).cast("long").alias("degree")))
-    ec = (edges.join(comp.withColumnRenamed("node", "src"), "src")
-          .groupBy("component")
-          .agg(F.count(F.lit(1)).cast("long").alias("n_edges")))
-    odd = F.sum(F.when(F.col("degree") % 2 == 1, 1).otherwise(0))
-    return (comp.join(deg, "node").join(ec, "component", "left")
-            .groupBy("component")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_nodes"),
-                 F.coalesce(F.max("n_edges"), F.lit(0)).cast("long")
-                 .alias("n_edges"),
-                 odd.cast("long").alias("n_odd_degree"),
-                 (odd == 0).alias("has_euler_circuit"),
-                 odd.isin(0, 2).alias("has_euler_trail")))
-
-
-def _csv_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the RFC 4180 state-machine walk: every manifest column
-    re-derived from the pure csv_file_spec formulas — a missed ""-escape,
-    a split-on-comma shortcut, a CRLF/LF slip or a lost final record
-    flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.csvfile import (
-        csv_file_spec,
-    )
-    rows = []
-    for i in range(n):
-        spec = csv_file_spec(i, seed)
-        flat = [x for row in spec for x in (str(row[0]), row[1], row[2])]
-        joined = "|".join(x for _, b, c in spec for x in (b, c))
-        hostile = sum(1 for f in flat
-                      if any(x in f for x in (',', '"', '\r', '\n')))
-        newl = sum(f.count("\n") for f in flat)
-        empty = sum(1 for f in flat if f == "")
-        rows.append(f"({i}, {len(spec)}, 3,"
-                    f" {sum(a for a, _, _ in spec)},"
-                    f" '{_h.md5(joined.encode()).hexdigest()}',"
-                    f" {hostile}, {newl}, {empty})")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id,"
-        " CAST(n_records AS BIGINT) AS n_records,"
-        " CAST(n_fields AS INTEGER) AS n_fields,"
-        " CAST(sum_a AS BIGINT) AS sum_a, text_md5,"
-        " CAST(n_hostile_fields AS BIGINT) AS n_hostile_fields,"
-        " CAST(n_embedded_newlines AS BIGINT) AS n_embedded_newlines,"
-        " CAST(n_empty_fields AS BIGINT) AS n_empty_fields"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, n_records, n_fields, sum_a, text_md5,"
-        " n_hostile_fields, n_embedded_newlines, n_empty_fields)")
-
-
-@register("multimodal_csv_rfc4180", _csv_fixture_sql())
-def multimodal_csv_rfc4180(spark, sf_dir):
-    """RFC 4180 CSV manifest via the HAND-ROLLED four-state byte machine
-    (sources/csvfile.csv_manifest): quoted fields with ""-escape pairs,
-    embedded commas, CRLF and bare-LF line breaks INSIDE fields, empty
-    fields, both record terminators and the unterminated final record —
-    the transitions a split-on-comma parser gets wrong. The writer is
-    the stdlib csv module (independently implemented, QUOTE_MINIMAL +
-    CRLF canonical form), so the reader faces real producer bytes;
-    malformed input is an honest ValueError. One mapInPandas over the
-    binary column, fully distributed."""
-    from .sources.csvfile import csv_manifest, synthetic_csv_files
-    return csv_manifest(synthetic_csv_files(spark, 30))
-
-
-_BT_ITERS = 6
-
-_BT_SQL = f"""
-WITH RECURSIVE ty AS (
-  SELECT event_type AS t,
-         CAST(row_number() OVER (ORDER BY event_type) AS INTEGER) AS ti
-  FROM (SELECT DISTINCT event_type FROM events)
-), days AS (
-  SELECT DISTINCT CAST(ts AS DATE) AS day FROM events
-), cn AS (
-  SELECT CAST(ts AS DATE) AS day, event_type AS t, count(*) AS c
-  FROM events GROUP BY 1, 2
-), grid AS (
-  SELECT d.day, ty.t, ty.ti, coalesce(cn.c, 0) AS c
-  FROM days d CROSS JOIN ty
-  LEFT JOIN cn ON cn.day = d.day AND cn.t = ty.t
-), mt AS MATERIALIZED (
-  SELECT a.ti AS ia, b.ti AS ib,
-         CASE WHEN a.c > b.c THEN 2 WHEN a.c < b.c THEN 0 ELSE 1 END
-             AS wa2
-  FROM grid a JOIN grid b ON a.day = b.day AND a.t < b.t
-), pairn AS (
-  SELECT i.ti AS i, j.ti AS j,
-         CAST(coalesce(sum(CASE WHEN (mt.ia = i.ti AND mt.ib = j.ti)
-                                  OR (mt.ia = j.ti AND mt.ib = i.ti)
-                           THEN 1 ELSE 0 END), 0) AS BIGINT) AS n
-  FROM ty i CROSS JOIN ty j LEFT JOIN mt ON TRUE
-  GROUP BY 1, 2
-), wsum AS (
-  SELECT ty.ti AS i,
-         CAST(coalesce(sum(CASE WHEN mt.ia = ty.ti THEN mt.wa2
-                                WHEN mt.ib = ty.ti THEN 2 - mt.wa2
-                                ELSE 0 END), 0) AS BIGINT) AS w2
-  FROM ty LEFT JOIN mt ON mt.ia = ty.ti OR mt.ib = ty.ti
-  GROUP BY 1
-), consts AS (
-  SELECT (SELECT list(l ORDER BY i) FROM (
-            SELECT i, list(n ORDER BY j) AS l FROM pairn GROUP BY i) q)
-      AS nn,
-         (SELECT list(w2 ORDER BY i) FROM wsum) AS ww
-), st AS (
-  SELECT 0 AS it, 0 AS phase,
-         list_transform(range(1, 6), i -> CAST(0 AS BIGINT)) AS raw,
-         list_transform(range(1, 6),
-                        i -> CAST(1000000 AS BIGINT)) AS p,
-         c.nn AS nn, c.ww AS ww
-  FROM consts c
-  UNION ALL
-  SELECT s.it + 1, 1 - s.phase,
-         CASE WHEN s.phase = 0 THEN
-           list_transform(range(1, 6), i -> CASE WHEN s.ww[i] = 0
-             THEN CAST(0 AS BIGINT)
-             ELSE s.ww[i] * 1000000000 // greatest(list_sum(
-               list_transform(range(1, 6), j -> CASE WHEN j = i
-                 THEN CAST(0 AS BIGINT)
-                 ELSE s.nn[i][j] * 1000000000000
-                      // greatest(s.p[i] + s.p[j], 1) END)), 1) END)
-         ELSE s.raw END AS raw2,
-         CASE WHEN s.phase = 0 THEN s.p ELSE
-           list_transform(s.raw,
-                          x -> x * 5000000 // greatest(list_sum(s.raw),
-                                                       1))
-         END AS p2,
-         s.nn, s.ww
-  FROM st s
-  WHERE s.it < 2 * {_BT_ITERS}
-), fin AS (
-  SELECT p FROM st WHERE phase = 0 ORDER BY it DESC LIMIT 1
-), games AS (
-  SELECT i, CAST(sum(n) AS BIGINT) AS n_games FROM pairn GROUP BY i
-)
-SELECT ty.t AS event_type, g.n_games, w.w2 AS wins_x2,
-       CAST(f.p[ty.ti] AS BIGINT) AS strength_e6,
-       CAST(rank() OVER (ORDER BY f.p[ty.ti] DESC, ty.t) AS INTEGER)
-           AS rank
-FROM ty, fin f, games g, wsum w
-WHERE g.i = ty.ti AND w.i = ty.ti
-"""
-
-
-@register("q_events_bradley_terry", _BT_SQL)
-def q_events_bradley_terry(spark, sf_dir):
-    """Bradley-Terry paired-comparison strengths (Bradley & Terry 1952)
-    for the daily event-type tournament, fit by Hunter's (2004) MM
-    iteration: p_i ← W_i / Σ_j n_ij/(p_i+p_j), renormalized to Σp = 5e6,
-    for a FIXED {_BT_ITERS} rounds in e6 fixed point — every division is
-    floored integer arithmetic (draws count as half-wins via doubled
-    units), so the replay is bit-identical on both engines with no
-    convergence tolerance. The n/W tables ride INSIDE the recursion
-    state so every lambda references only committed state columns (the
-    LATERAL-capture landmine never arises). Engine: driver replay over
-    the bounded 5×5 tournament (the Viterbi discipline); oracle: a
-    two-phase propose/normalize list recursion with nested lambdas."""
-    e = _t(spark, sf_dir, "events")
-    grid = (e.groupBy(F.to_date("ts").alias("day"),
-                      F.col("event_type").alias("t"))
-            .agg(F.count(F.lit(1)).alias("c")))
-    rows = grid.collect()
-    types = sorted({r["t"] for r in rows})
-    days = sorted({r["day"] for r in rows})
-    cnt = {(r["day"], r["t"]): r["c"] for r in rows}
-    k = len(types)
-    nn = [[0] * k for _ in range(k)]
-    w2 = [0] * k
-    for day in days:
-        for i in range(k):
-            for j in range(i + 1, k):
-                ca = cnt.get((day, types[i]), 0)
-                cb = cnt.get((day, types[j]), 0)
-                nn[i][j] += 1
-                nn[j][i] += 1
-                if ca > cb:
-                    w2[i] += 2
-                elif ca < cb:
-                    w2[j] += 2
-                else:
-                    w2[i] += 1
-                    w2[j] += 1
-    p = [1_000_000] * k
-    for _ in range(_BT_ITERS):
-        raw = []
-        for i in range(k):
-            if w2[i] == 0:
-                raw.append(0)
-                continue
-            denom = sum(nn[i][j] * 10 ** 12 // max(p[i] + p[j], 1)
-                        for j in range(k) if j != i)
-            raw.append(w2[i] * 10 ** 9 // max(denom, 1))
-        tot = max(sum(raw), 1)
-        p = [x * 5_000_000 // tot for x in raw]
-    order = sorted(range(k), key=lambda i: (-p[i], types[i]))
-    rank = [0] * k
-    for pos, i in enumerate(order):
-        rank[i] = pos + 1
-    out = [(types[i], sum(nn[i]), w2[i], p[i], rank[i])
-           for i in range(k)]
-    return spark.createDataFrame(
-        out, "event_type string, n_games long, wins_x2 long,"
-             " strength_e6 long, rank int")
-
-
-_LUHN_EXPR = """
-CAST(list_sum(list_transform(range(1, 17), i -> CASE WHEN i % 2 = 1
-  THEN (CASE WHEN 2 * ((strpos('0123456789abcdef',
-                               substr(h, CAST(i AS INTEGER), 1)) - 1)
-              % 10) < 10
-        THEN 2 * ((strpos('0123456789abcdef',
-                          substr(h, CAST(i AS INTEGER), 1)) - 1) % 10)
-        ELSE 2 * ((strpos('0123456789abcdef',
-                          substr(h, CAST(i AS INTEGER), 1)) - 1) % 10)
-             - 9 END)
-  ELSE (strpos('0123456789abcdef',
-               substr(h, CAST(i AS INTEGER), 1)) - 1) % 10 END))
-  AS BIGINT)
-"""
-
-_LUHN_SQL = f"""
-WITH pans AS (
-  SELECT c_custkey, substr(md5('luhn:' || c_custkey), 1, 16) AS h
-  FROM customer
-), digits AS (
-  SELECT c_custkey,
-         (SELECT string_agg(
-             CAST((strpos('0123456789abcdef', substr(h, i, 1)) - 1) % 10
-                  AS VARCHAR), '' ORDER BY i)
-          FROM (SELECT CAST(unnest(range(1, 17)) AS INTEGER) AS i)) AS pan,
-         {_LUHN_EXPR} AS luhn_sum
-  FROM pans
-)
-SELECT c_custkey,
-       substr(pan, 1, 6) || '******' || substr(pan, 13, 4) AS pan_masked,
-       luhn_sum, luhn_sum % 10 = 0 AS luhn_valid
-FROM digits
-"""
-
-
-@register("q_customers_luhn_check", _LUHN_SQL)
-def q_customers_luhn_check(spark, sf_dir):
-    """Luhn mod-10 validation (Luhn 1960, ISO/IEC 7812 — the checksum on
-    every payment-card and IMEI number) over synthetic 16-digit account
-    numbers derived per customer from md5 hex (digit = hex value mod
-    10): double every second digit from the right, subtract 9 above 9,
-    valid iff the sum ≡ 0 (mod 10). The PII-handling surface next to
-    text_pii_redact: the output carries only the masked first-6/last-4
-    form plus the validity verdict — exactly what a redaction pipeline
-    keeps. Pure integer digit arithmetic via identical
-    transform/aggregate expressions on both engines, map-side only."""
-    c = _t(spark, sf_dir, "customer")
-    pans = c.select("c_custkey",
-                    F.expr("substr(md5(concat('luhn:', c_custkey)),"
-                           " 1, 16)").alias("h"))
-    digit = ("(instr('0123456789abcdef', substr(h, {i}, 1)) - 1) % 10")
-    pan = F.expr("concat(" + ", ".join(
-        f"CAST({digit.format(i=i)} AS STRING)" for i in range(1, 17))
-        + ")")
-    luhn = F.expr(
-        "aggregate(sequence(1, 16), 0L, (acc, i) -> acc + CASE"
-        " WHEN i % 2 = 1 THEN CASE"
-        "   WHEN 2 * ((instr('0123456789abcdef', substr(h, i, 1)) - 1)"
-        "        % 10) < 10"
-        "   THEN 2 * ((instr('0123456789abcdef', substr(h, i, 1)) - 1)"
-        "        % 10)"
-        "   ELSE 2 * ((instr('0123456789abcdef', substr(h, i, 1)) - 1)"
-        "        % 10) - 9 END"
-        " ELSE (instr('0123456789abcdef', substr(h, i, 1)) - 1) % 10"
-        " END)")
-    return (pans.select("c_custkey", pan.alias("pan"),
-                        luhn.cast("long").alias("luhn_sum"))
-            .select("c_custkey",
-                    F.concat(F.substring("pan", 1, 6), F.lit("******"),
-                             F.substring("pan", 13, 4))
-                    .alias("pan_masked"),
-                    "luhn_sum",
-                    (F.col("luhn_sum") % 10 == 0).alias("luhn_valid")))
-
-
-def _ics_fixture_sql(n: int = 24, seed: int = 42) -> str:
-    """Oracle for the iCalendar walk: occurrences re-derived from the
-    pure ics_cal_spec formulas via the same RFC 5545 expansion rules in
-    plain Python datetime — a folding slip, a BYDAY weekday mixup or an
-    off-by-one in the DAILY stride flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.icsfile import (
-        _fmt,
-        expand_rrule,
-        ics_cal_spec,
-    )
-    rows = []
-    for i in range(n):
-        for ev in ics_cal_spec(i, seed):
-            occ = [_fmt(d) for d in expand_rrule(ev["dtstart"],
-                                                 ev["rule"])]
-            rows.append(
-                f"({i}, '{ev['uid']}', '{ev['rule']['freq']}',"
-                f" {len(occ)}, '{occ[0]}', '{occ[-1]}',"
-                f" '{_h.md5('|'.join(occ).encode()).hexdigest()}',"
-                f" {len(ev['summary'])})")
-    return (
-        "SELECT CAST(cal_id AS BIGINT) AS cal_id, uid, freq,"
-        " CAST(n_occurrences AS INTEGER) AS n_occurrences,"
-        " first_occ, last_occ, occ_md5,"
-        " CAST(summary_len AS INTEGER) AS summary_len"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(cal_id, uid, freq, n_occurrences, first_occ, last_occ,"
-        " occ_md5, summary_len)")
-
-
-@register("multimodal_ics_rrule", _ics_fixture_sql())
-def multimodal_ics_rrule(spark, sf_dir):
-    """iCalendar recurrence expansion via the HAND-ROLLED RFC 5545 walk
-    (sources/icsfile.ics_manifest): 75-octet line UNFOLDING (CRLF +
-    space continuations — the part naive line-split parsers corrupt),
-    VEVENT block walk, basic-form UTC DTSTART parse, and exact RRULE
-    expansion for FREQ=DAILY;INTERVAL;COUNT and FREQ=WEEKLY;BYDAY;COUNT
-    — anything beyond those shapes (UNTIL, BYMONTHDAY, weekly
-    INTERVAL>1, local-time DTSTART) is an honest NotImplementedError,
-    because wrong calendar math is worse than refusal. The
-    scheduling-data ingestion surface: one mapInPandas over the binary
-    column, fully distributed; every expanded occurrence list is pinned
-    by md5 against the oracle's independent datetime re-derivation."""
-    from .sources.icsfile import ics_manifest, synthetic_ics_files
-    return ics_manifest(synthetic_ics_files(spark, 24))
-
-
-def _orc_fixture_sql(n: int = 18, seed: int = 42) -> str:
-    """Oracle for the ORC footer walk: content columns (row count, field
-    names, int min/max/sum, string min/max/total length) re-derived from
-    the pure orc_file_spec formulas; the stripe count — writer policy,
-    not content — comes from pyarrow's OWN ORCFile reader, an
-    implementation fully independent of the hand-rolled walker it
-    gates."""
-    import io as _io
-
-    import pyarrow.orc as _orc
-    from knowledge_extraction_pipeline_spark.sources.orcfooter import (
-        build_orc,
-        orc_file_spec,
-    )
-    rows = []
-    for i in range(n):
-        spec = orc_file_spec(i, seed)
-        ks = [k for k, _ in spec]
-        vs = [v for _, v in spec]
-        f = _orc.ORCFile(_io.BytesIO(build_orc(i, seed)))
-        rows.append(
-            f"({i}, {len(spec)}, {f.nstripes}, TRUE, 'k,v', {min(ks)},"
-            f" {max(ks)}, {sum(ks)}, '{min(vs)}', '{max(vs)}',"
-            f" {sum(len(v) for v in vs)})")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id,"
-        " CAST(n_rows AS BIGINT) AS n_rows,"
-        " CAST(n_stripes AS INTEGER) AS n_stripes, stripes_consistent,"
-        " field_names, CAST(k_min AS BIGINT) AS k_min,"
-        " CAST(k_max AS BIGINT) AS k_max, CAST(k_sum AS BIGINT) AS k_sum,"
-        " v_min, v_max, CAST(v_total_len AS BIGINT) AS v_total_len"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, n_rows, n_stripes, stripes_consistent, field_names,"
-        " k_min, k_max, k_sum, v_min, v_max, v_total_len)")
-
-
-@register("multimodal_orc_footer", _orc_fixture_sql())
-def multimodal_orc_footer(spark, sf_dir):
-    """ORC footer manifest via the tail walk that REUSES the hand-rolled
-    protobuf wire walker against real third-party bytes
-    (sources/orcfooter.parse_orc_footer): last-byte postscript length,
-    PostScript magic/compression checks (compressed footers honestly
-    refused), then the protobuf Footer — stripes, schema field names,
-    numberOfRows, and per-column statistics with sint64 ZigZag
-    int min/max/sum and string min/max/total-length. Files come from
-    the REAL ORC writer (pyarrow.orc) with a small stripe size, so
-    multi-stripe walking and the Σ(stripe rows)=total invariant are
-    genuinely exercised; the oracle's stripe count is read by pyarrow's
-    own ORCFile — an independent implementation. One mapInPandas over
-    the binary column."""
-    from .sources.orcfooter import orc_footer_manifest, synthetic_orc_files
-    return orc_footer_manifest(synthetic_orc_files(spark, 18))
-
-
-_PETTITT_SQL = """
-WITH d AS (
-  SELECT CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS rn, day,
-         CAST(c AS BIGINT) AS x
-  FROM (SELECT CAST(ts AS DATE) AS day, count(*) AS c
-        FROM events GROUP BY 1)
-), n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM d),
-s AS (
-  SELECT a.rn AS i, b.rn AS j,
-         CASE WHEN a.x > b.x THEN 1 WHEN a.x < b.x THEN -1 ELSE 0 END
-             AS sg
-  FROM d a JOIN d b ON a.rn < b.rn
-), u AS (
-  SELECT t.rn AS t_idx, t.day,
-         CAST(sum(CASE WHEN s.i <= t.rn AND s.j > t.rn THEN s.sg
-                  ELSE 0 END) AS BIGINT) AS u_t
-  FROM d t, s
-  WHERE t.rn < (SELECT n FROM n)
-  GROUP BY t.rn, t.day
-), k AS (
-  SELECT max(abs(u_t)) AS k_stat,
-         min(CASE WHEN abs(u_t) = (SELECT max(abs(u_t)) FROM u)
-             THEN t_idx END) AS t_star
-  FROM u
-)
-SELECT u.t_idx, u.day, u.u_t,
-       CAST(k.k_stat AS BIGINT) AS k_stat,
-       CAST(k.t_star AS BIGINT) AS t_star_idx,
-       round(2 * exp(-6.0 * k.k_stat * k.k_stat
-                     / ((SELECT n FROM n) ** 3
-                        + (SELECT n FROM n) ** 2)), 6) AS p_approx
-FROM u, k
-"""
-
-
-@register("q_events_pettitt_test", _PETTITT_SQL)
-def q_events_pettitt_test(spark, sf_dir):
-    """Pettitt change-point test (Pettitt 1979) on the daily event-count
-    series — the rank-based, distribution-free complement of
-    q_events_cusum / q_events_optimal_segmentation: U_t = ΣΣ sgn(x_i −
-    x_j) over pairs straddling t, K = max|U_t| locating the single most
-    probable shift (earliest argmax tiebreak). Every U_t is an exact
-    integer on both engines (pure sign sums); the one float is the
-    classic approximate significance 2·exp(−6K²/(n³+n²)), round-6. The
-    full U_t trajectory is emitted so the hash pins the whole statistic
-    path, not just its extremum."""
-    e = _t(spark, sf_dir, "events")
-    d = (e.groupBy(F.to_date("ts").alias("day"))
-         .agg(F.count(F.lit(1)).alias("c"))
-         .select(F.row_number().over(Window.orderBy("day"))
-                 .cast("long").alias("rn"), "day",
-                 F.col("c").cast("long").alias("x")))
-    n = d.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    a, b = d.alias("a"), d.alias("b")
-    s = (a.join(b, F.col("a.rn") < F.col("b.rn"))
-         .select(F.col("a.rn").alias("i"), F.col("b.rn").alias("j"),
-                 F.when(F.col("a.x") > F.col("b.x"), 1)
-                 .when(F.col("a.x") < F.col("b.x"), -1)
-                 .otherwise(0).alias("sg")))
-    t = d.crossJoin(F.broadcast(n)).filter(F.col("rn") < F.col("n")) \
-         .select(F.col("rn").alias("t_idx"), "day")
-    u = (t.join(s, (F.col("i") <= F.col("t_idx"))
-                & (F.col("j") > F.col("t_idx")), "left")
-         .groupBy("t_idx", "day")
-         .agg(F.coalesce(F.sum("sg"), F.lit(0)).cast("long")
-              .alias("u_t")))
-    k = (u.agg(F.max(F.abs(F.col("u_t"))).alias("k_stat"))
-         .crossJoin(u.select("t_idx", F.abs("u_t").alias("au")))
-         .filter(F.col("au") == F.col("k_stat"))
-         .agg(F.first("k_stat").alias("k_stat"),
-              F.min("t_idx").alias("t_star")))
-    return (u.crossJoin(F.broadcast(k)).crossJoin(F.broadcast(n))
-            .select("t_idx", "day", "u_t",
-                    F.col("k_stat").cast("long").alias("k_stat"),
-                    F.col("t_star").cast("long").alias("t_star_idx"),
-                    F.round(2 * F.exp(-6.0 * F.col("k_stat")
-                                      * F.col("k_stat")
-                                      / (F.pow(F.col("n"), 3)
-                                         + F.pow(F.col("n"), 2))), 6)
-                    .alias("p_approx")))
-
-
-def _msgpack_fixture_sql(n: int = 42, seed: int = 42) -> str:
-    """Oracle for the MessagePack walk: every manifest column re-derived
-    from the pure msgpack_spec formulas (payload_bytes from the writer,
-    itself pinned to spec bytes by tests/test_msgpackfile.py golden
-    vectors). Fixtures straddle every encoding boundary, so a missed
-    uint16→uint32 promotion or a fixstr/str8 mixup flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.msgpackfile import (
-        build_msgpack,
-        msgpack_spec,
-    )
-    rows = []
-    for i in range(n):
-        s = msgpack_spec(i, seed)
-        rows.append(
-            f"({i}, {s['rec_id']}, {s['neg']}, '{s['name']}',"
-            f" {len(s['name'])}, {len(s['tags'])},"
-            f" '{_h.md5('|'.join(s['tags']).encode()).hexdigest()}',"
-            f" {'TRUE' if s['flag'] else 'FALSE'}, TRUE, {s['big']},"
-            f" {s['meta_hour']}, {s['n_extra']},"
-            f" {len(build_msgpack(i, seed))})")
-    return (
-        "SELECT CAST(msg_id AS BIGINT) AS msg_id,"
-        " CAST(rec_id AS BIGINT) AS rec_id, CAST(neg AS BIGINT) AS neg,"
-        " name, CAST(name_len AS INTEGER) AS name_len,"
-        " CAST(n_tags AS INTEGER) AS n_tags, tags_md5, flag, has_nil,"
-        " CAST(big AS BIGINT) AS big,"
-        " CAST(meta_hour AS BIGINT) AS meta_hour,"
-        " CAST(n_extra_keys AS INTEGER) AS n_extra_keys,"
-        " CAST(payload_bytes AS INTEGER) AS payload_bytes"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(msg_id, rec_id, neg, name, name_len, n_tags, tags_md5, flag,"
-        " has_nil, big, meta_hour, n_extra_keys, payload_bytes)")
-
-
-@register("multimodal_msgpack_records", _msgpack_fixture_sql())
-def multimodal_msgpack_records(spark, sf_dir):
-    """MessagePack record manifest via the HAND-ROLLED type-byte walk
-    (sources/msgpackfile.msgpack_manifest): fixint/fixstr/fixarray/
-    fixmap families plus uint8-64, int8-64, str8/16, array16 and map16,
-    nested maps, nil and booleans — with fixtures straddling every
-    promotion boundary (127/128, 255/256, 65535/65536, 2³²; -32/-33;
-    31/32-char strings; 15/16-element arrays and maps) and honest
-    refusal of ext/bin/float families. The cache/queue/RPC wire-format
-    surface next to protobuf and Avro: one mapInPandas over the binary
-    column, fully distributed."""
-    from .sources.msgpackfile import (
-        msgpack_manifest,
-        synthetic_msgpack_files,
-    )
-    return msgpack_manifest(synthetic_msgpack_files(spark, 42))
-
-
-_SIGNTEST_SQL = """
-WITH RECURSIVE d AS (
-  SELECT CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS rn,
-         CAST(c AS BIGINT) AS x
-  FROM (SELECT CAST(ts AS DATE) AS day, count(*) AS c
-        FROM events GROUP BY 1)
-), s AS (
-  SELECT CASE WHEN x > lag(x) OVER (ORDER BY rn) THEN 1
-              WHEN x < lag(x) OVER (ORDER BY rn) THEN -1 ELSE 0 END
-             AS sg
-  FROM d
-), agg AS (
-  SELECT CAST(sum(CASE WHEN sg = 1 THEN 1 ELSE 0 END) AS BIGINT) AS kp,
-         CAST(sum(CASE WHEN sg = -1 THEN 1 ELSE 0 END) AS BIGINT) AS kn
-  FROM s WHERE sg IS NOT NULL AND sg <> 0
-), binom AS (
-  SELECT CAST(0 AS BIGINT) AS j, CAST(1 AS HUGEINT) AS c,
-         (SELECT kp + kn FROM agg) AS n
-  UNION ALL
-  SELECT j + 1, c * (n - j) // (j + 1), n
-  FROM binom WHERE j < n
-), tails AS (
-  SELECT
-    (SELECT sum(c) FROM binom, agg WHERE j >= agg.kp) AS num_ge,
-    (SELECT sum(c) FROM binom, agg WHERE j <= agg.kp) AS num_le,
-    (SELECT sum(c) FROM binom) AS denom
-)
-SELECT agg.kp + agg.kn AS n_moves, agg.kp AS k_pos, agg.kn AS k_neg,
-       CAST(t.num_ge * 1000000000 // t.denom AS BIGINT) AS tail_ge_e9,
-       CAST(t.num_le * 1000000000 // t.denom AS BIGINT) AS tail_le_e9,
-       CAST(least(1000000000,
-                  2 * least(t.num_ge * 1000000000 // t.denom,
-                            t.num_le * 1000000000 // t.denom))
-            AS BIGINT) AS p_two_e9
-FROM agg, tails t
-"""
-
-
-@register("q_events_sign_test", _SIGNTEST_SQL)
-def q_events_sign_test(spark, sf_dir):
-    """Exact sign test (the oldest nonparametric test — Arbuthnott 1710)
-    on day-over-day movements of the daily event count: k up-moves out
-    of n nonzero moves against Binomial(n, ½). The binomial tail is an
-    EXACT RATIONAL — Σ C(n,j) big-integers over 2ⁿ, built by the
-    multiplicative recurrence C(n,j) = C(n,j−1)·(n−j+1)/j (every
-    division exact) — floored once to e9; the two-sided p doubles the
-    smaller tail. No normal approximation anywhere, unlike
-    q_events_runs_test's z-statistic. Engine: the same exact recurrence
-    in bounded driver math (n ≤ days); oracle: a recursive-CTE Pascal
-    walk."""
-    e = _t(spark, sf_dir, "events")
-    d = (e.groupBy(F.to_date("ts").alias("day"))
-         .agg(F.count(F.lit(1)).alias("c")))
-    w = Window.orderBy("day")
-    s = (d.select(F.col("c").alias("x"),
-                  F.lag("c").over(w).alias("px"))
-         .filter(F.col("px").isNotNull())
-         .select(F.when(F.col("x") > F.col("px"), 1)
-                 .when(F.col("x") < F.col("px"), -1)
-                 .otherwise(0).alias("sg"))
-         .filter(F.col("sg") != 0))
-    r = s.agg(F.sum(F.when(F.col("sg") == 1, 1).otherwise(0))
-              .alias("kp"),
-              F.sum(F.when(F.col("sg") == -1, 1).otherwise(0))
-              .alias("kn")).collect()[0]
-    kp, kn = int(r["kp"] or 0), int(r["kn"] or 0)
-    n = kp + kn
-    c = [1] * (n + 1)
-    for j in range(1, n + 1):
-        c[j] = c[j - 1] * (n - j + 1) // j
-    denom = sum(c)
-    ge = sum(c[kp:]) * 10 ** 9 // denom
-    le = sum(c[:kp + 1]) * 10 ** 9 // denom
-    out = [(n, kp, kn, ge, le, min(10 ** 9, 2 * min(ge, le)))]
-    return spark.createDataFrame(
-        out, "n_moves long, k_pos long, k_neg long, tail_ge_e9 long,"
-             " tail_le_e9 long, p_two_e9 long")
-
-
-_CVM_SQL = """
-WITH v AS (
-  SELECT event_type AS g, value, event_id,
-         row_number() OVER (ORDER BY value, event_id) AS r
-  FROM events WHERE event_type IN ('click', 'purchase')
-), ranked AS (
-  SELECT g, CAST(r AS HUGEINT) AS r,
-         CAST(row_number() OVER (PARTITION BY g ORDER BY r)
-              AS HUGEINT) AS i
-  FROM v
-), sums AS (
-  SELECT
-    (SELECT CAST(count(*) AS HUGEINT) FROM ranked WHERE g = 'click')
-        AS n,
-    (SELECT CAST(count(*) AS HUGEINT) FROM ranked WHERE g = 'purchase')
-        AS m,
-    (SELECT sum((r - i) * (r - i)) FROM ranked WHERE g = 'click')
-        AS sa,
-    (SELECT sum((r - i) * (r - i)) FROM ranked WHERE g = 'purchase')
-        AS sb
-)
-SELECT CAST(n AS BIGINT) AS n_click, CAST(m AS BIGINT) AS n_purchase,
-       CAST(n * sa + m * sb AS BIGINT) AS u_stat,
-       round(CAST(n * sa + m * sb AS DOUBLE)
-             / (CAST(n AS DOUBLE) * CAST(m AS DOUBLE)
-                * CAST(n + m AS DOUBLE))
-             - (4 * CAST(n AS DOUBLE) * CAST(m AS DOUBLE) - 1)
-               / (6 * CAST(n + m AS DOUBLE)), 6) AS t_stat
-FROM sums
-"""
-
-
-@register("q_events_cramer_von_mises", _CVM_SQL)
-def q_events_cramer_von_mises(spark, sf_dir):
-    """Two-sample Cramér-von Mises test (Anderson 1962) between click
-    and purchase value distributions — the integrated-squared-ECDF
-    complement of the supremum-based q_events_ks_test: U = N·Σ(rᵢ−i)² +
-    M·Σ(sⱼ−j)² over combined ranks, T = U/(NM(N+M)) − (4NM−1)/(6(N+M)).
-    Ranks use the (value, event_id) total order, so U is an exact
-    integer on both engines (ties broken identically, documented in
-    place of midranks); T is the only float (round-6)."""
-    e = _t(spark, sf_dir, "events")
-    v = (e.filter(F.col("event_type").isin("click", "purchase"))
-         .select(F.col("event_type").alias("g"),
-                 F.row_number().over(Window.orderBy("value", "event_id"))
-                 .cast("decimal(38,0)").alias("r")))
-    ranked = v.select("g", "r",
-                      F.row_number().over(
-                          Window.partitionBy("g").orderBy("r"))
-                      .cast("decimal(38,0)").alias("i"))
-    d2 = (F.col("r") - F.col("i")) * (F.col("r") - F.col("i"))
-    sums = ranked.groupBy("g").agg(
-        F.count(F.lit(1)).cast("decimal(38,0)").alias("cnt"),
-        F.sum(d2).alias("s2"))
-    f = sums.agg(
-        F.first(F.when(F.col("g") == "click", F.col("cnt")),
-                ignorenulls=True).alias("n"),
-        F.first(F.when(F.col("g") == "purchase", F.col("cnt")),
-                ignorenulls=True).alias("m"),
-        F.first(F.when(F.col("g") == "click", F.col("s2")),
-                ignorenulls=True).alias("sa"),
-        F.first(F.when(F.col("g") == "purchase", F.col("s2")),
-                ignorenulls=True).alias("sb"))
-    nd = F.col("n").cast("double")
-    md = F.col("m").cast("double")
-    u = F.col("n") * F.col("sa") + F.col("m") * F.col("sb")
-    return f.select(
-        F.col("n").cast("long").alias("n_click"),
-        F.col("m").cast("long").alias("n_purchase"),
-        u.cast("long").alias("u_stat"),
-        F.round(u.cast("double") / (nd * md * (nd + md))
-                - (4 * nd * md - 1) / (6 * (nd + md)), 6)
-        .alias("t_stat"))
-
-
-# HMM parameters in e6 fixed point (pinned constants, the injected-table
-# discipline): 2 states (quiet, busy) × 3 observation symbols (volume
-# terciles).
-_HMM_PI = (500_000, 500_000)
-_HMM_A = ((850_000, 150_000), (300_000, 700_000))
-_HMM_B = ((500_000, 350_000, 150_000), (150_000, 350_000, 500_000))
-
-_HMMF_SQL = f"""
-WITH RECURSIVE d AS (
-  SELECT day, CAST(c AS BIGINT) AS x,
-         CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS rn,
-         CAST(3 * (row_number() OVER (ORDER BY c, day) - 1)
-              // count(*) OVER () AS INTEGER) AS obs
-  FROM (SELECT CAST(ts AS DATE) AS day, count(*) AS c
-        FROM events GROUP BY 1)
-), nn AS (SELECT max(rn) AS n FROM d),
-st AS (
-  SELECT CAST(0 AS BIGINT) AS t, CAST({_HMM_PI[0]} AS BIGINT) AS a1,
-         CAST({_HMM_PI[1]} AS BIGINT) AS a2, CAST(0 AS BIGINT) AS sc
-  UNION ALL
-  SELECT s.t + 1,
-         ((s.a1 * {_HMM_A[0][0]} // 1000000
-           + s.a2 * {_HMM_A[1][0]} // 1000000)
-          * ([{_HMM_B[0][0]}, {_HMM_B[0][1]}, {_HMM_B[0][2]}]
-             [o.obs + 1]) // 1000000) * 1000000
-         // greatest(
-             (s.a1 * {_HMM_A[0][0]} // 1000000
-              + s.a2 * {_HMM_A[1][0]} // 1000000)
-             * ([{_HMM_B[0][0]}, {_HMM_B[0][1]}, {_HMM_B[0][2]}]
-                [o.obs + 1]) // 1000000
-             + (s.a1 * {_HMM_A[0][1]} // 1000000
-                + s.a2 * {_HMM_A[1][1]} // 1000000)
-             * ([{_HMM_B[1][0]}, {_HMM_B[1][1]}, {_HMM_B[1][2]}]
-                [o.obs + 1]) // 1000000, 1) AS a1n,
-         ((s.a1 * {_HMM_A[0][1]} // 1000000
-           + s.a2 * {_HMM_A[1][1]} // 1000000)
-          * ([{_HMM_B[1][0]}, {_HMM_B[1][1]}, {_HMM_B[1][2]}]
-             [o.obs + 1]) // 1000000) * 1000000
-         // greatest(
-             (s.a1 * {_HMM_A[0][0]} // 1000000
-              + s.a2 * {_HMM_A[1][0]} // 1000000)
-             * ([{_HMM_B[0][0]}, {_HMM_B[0][1]}, {_HMM_B[0][2]}]
-                [o.obs + 1]) // 1000000
-             + (s.a1 * {_HMM_A[0][1]} // 1000000
-                + s.a2 * {_HMM_A[1][1]} // 1000000)
-             * ([{_HMM_B[1][0]}, {_HMM_B[1][1]}, {_HMM_B[1][2]}]
-                [o.obs + 1]) // 1000000, 1) AS a2n,
-         (s.a1 * {_HMM_A[0][0]} // 1000000
-          + s.a2 * {_HMM_A[1][0]} // 1000000)
-         * ([{_HMM_B[0][0]}, {_HMM_B[0][1]}, {_HMM_B[0][2]}]
-            [o.obs + 1]) // 1000000
-         + (s.a1 * {_HMM_A[0][1]} // 1000000
-            + s.a2 * {_HMM_A[1][1]} // 1000000)
-         * ([{_HMM_B[1][0]}, {_HMM_B[1][1]}, {_HMM_B[1][2]}]
-            [o.obs + 1]) // 1000000 AS scn
-  FROM st s JOIN d o ON o.rn = s.t + 1
-  WHERE s.t < (SELECT n FROM nn)
-)
-SELECT d.rn AS t, d.day, d.obs AS obs_symbol,
-       st.a1 AS alpha_quiet_e6, st.a2 AS alpha_busy_e6,
-       st.sc AS scale_raw
-FROM st JOIN d ON d.rn = st.t
-"""
-
-
-@register("q_events_hmm_forward", _HMMF_SQL)
-def q_events_hmm_forward(spark, sf_dir):
-    """HMM forward algorithm (Baum 1966 / Rabiner 1989) filtering the
-    daily-volume tercile sequence through a pinned 2-state
-    quiet/busy model — the SUM-product complement of q_events_viterbi's
-    max-product decode. Per step: αⱼ ← (Σᵢ αᵢAᵢⱼ)·Bⱼ(o) in e6 fixed
-    point, renormalized to Σα = 1e6 with the raw pre-normalization mass
-    emitted as scale_raw (the per-step likelihood factor — everything a
-    log-likelihood needs, with zero floats anywhere). Observation
-    symbols are exact rank terciles. The entire filtered trajectory is
-    emitted, pinning every one of the n integer updates. Engine:
-    bounded driver replay; oracle: a scalar two-column recursion (two
-    states → no list machinery at all)."""
-    e = _t(spark, sf_dir, "events")
-    d = (e.groupBy(F.to_date("ts").alias("day"))
-         .agg(F.count(F.lit(1)).alias("c")))
-    rows = (d.select("day", "c",
-                     F.row_number().over(Window.orderBy("day"))
-                     .alias("rn"),
-                     F.row_number().over(Window.orderBy("c", "day"))
-                     .alias("vr"))
-            .collect())
-    n = len(rows)
-    seq = sorted(rows, key=lambda r: r["rn"])
-    a1, a2 = _HMM_PI
-    out = []
-    for r in seq:
-        obs = 3 * (r["vr"] - 1) // n
-        r1 = (a1 * _HMM_A[0][0] // 10 ** 6
-              + a2 * _HMM_A[1][0] // 10 ** 6) * _HMM_B[0][obs] // 10 ** 6
-        r2 = (a1 * _HMM_A[0][1] // 10 ** 6
-              + a2 * _HMM_A[1][1] // 10 ** 6) * _HMM_B[1][obs] // 10 ** 6
-        sc = r1 + r2
-        a1 = r1 * 10 ** 6 // max(sc, 1)
-        a2 = r2 * 10 ** 6 // max(sc, 1)
-        out.append((r["rn"], r["day"], obs, a1, a2, sc))
-    return spark.createDataFrame(
-        out, "t long, day date, obs_symbol int, alpha_quiet_e6 long,"
-             " alpha_busy_e6 long, scale_raw long")
-
-
-_KDTREE_SQL = """
-WITH e AS (
-  SELECT vec_id, embedding[1]::DOUBLE AS d0, embedding[2]::DOUBLE AS d1,
-         embedding[3]::DOUBLE AS d2
-  FROM embeddings
-), l0 AS (
-  SELECT *, CASE WHEN (d0, vec_id) <= (
-    SELECT (d0, vec_id) FROM (
-      SELECT d0, vec_id,
-             row_number() OVER (ORDER BY d0, vec_id) AS rn,
-             count(*) OVER () AS n
-      FROM e) q WHERE rn = (n + 1) // 2)
-    THEN 0 ELSE 1 END AS b0
-  FROM e
-), l1 AS (
-  SELECT l0.*, CASE WHEN (d1, vec_id) <= m.mv THEN 0 ELSE 1 END AS b1
-  FROM l0 JOIN (
-    SELECT b0, (d1, vec_id) AS mv FROM (
-      SELECT b0, d1, vec_id,
-             row_number() OVER (PARTITION BY b0 ORDER BY d1, vec_id)
-                 AS rn,
-             count(*) OVER (PARTITION BY b0) AS n
-      FROM l0) q WHERE rn = (n + 1) // 2) m ON m.b0 = l0.b0
-), l2 AS (
-  SELECT l1.*, CASE WHEN (d2, vec_id) <= m.mv THEN 0 ELSE 1 END AS b2
-  FROM l1 JOIN (
-    SELECT b0, b1, (d2, vec_id) AS mv FROM (
-      SELECT b0, b1, d2, vec_id,
-             row_number() OVER (PARTITION BY b0, b1 ORDER BY d2, vec_id)
-                 AS rn,
-             count(*) OVER (PARTITION BY b0, b1) AS n
-      FROM l1) q WHERE rn = (n + 1) // 2) m
-    ON m.b0 = l1.b0 AND m.b1 = l1.b1
-)
-SELECT vec_id, CAST(4 * b0 + 2 * b1 + b2 AS INTEGER) AS leaf_id,
-       CAST(count(*) OVER (PARTITION BY b0, b1, b2) AS BIGINT)
-           AS leaf_count
-FROM l2
-"""
-
-
-@register("ann_kdtree_partition", _KDTREE_SQL)
-def ann_kdtree_partition(spark, sf_dir):
-    """KD-tree partitioning (Bentley 1975) of the embedding corpus:
-    three levels of exact median splits cycling dims 0→1→2, assigning
-    every vector a 3-bit leaf id — the spatial-partitioner primitive
-    behind balanced ANN sharding and spatial joins (each leaf holds
-    n/8 ± 1 vectors BY CONSTRUCTION, unlike IVF's data-dependent list
-    sizes). Medians are rank-exact under the (coordinate, vec_id) total
-    order — element ⌈n/2⌉ per cell — so the partition is deterministic
-    and identical across engines with zero float arithmetic beyond raw
-    coordinate comparisons. Each level is one window rank per cell (a
-    narrow shuffle on the cell key), the plan shape a 10⁹-vector
-    partitioner needs."""
-    emb = _t(spark, sf_dir, "embeddings")
-    df = emb.select("vec_id",
-                    F.col("embedding")[0].cast("double").alias("d0"),
-                    F.col("embedding")[1].cast("double").alias("d1"),
-                    F.col("embedding")[2].cast("double").alias("d2"))
-    for lvl, dim in enumerate(["d0", "d1", "d2"]):
-        part = [f"b{j}" for j in range(lvl)]
-        w = (Window.partitionBy(*part).orderBy(dim, "vec_id")
-             if part else Window.orderBy(dim, "vec_id"))
-        wc = Window.partitionBy(*part) if part else \
-            Window.partitionBy(F.lit(1))
-        ranked = df.withColumn("_rn", F.row_number().over(w)) \
-                   .withColumn("_n", F.count(F.lit(1)).over(wc))
-        med = (ranked.filter(F.col("_rn") == F.expr("(_n + 1) div 2"))
-               .select(*part, F.col(dim).alias("_mv"),
-                       F.col("vec_id").alias("_mid")))
-        df = (df.join(F.broadcast(med), part) if part
-              else df.crossJoin(F.broadcast(med)))
-        below = (F.col(dim) < F.col("_mv")) | \
-                ((F.col(dim) == F.col("_mv"))
-                 & (F.col("vec_id") <= F.col("_mid")))
-        df = df.withColumn(f"b{lvl}",
-                           F.when(below, 0).otherwise(1)) \
-               .drop("_mv", "_mid")
-    wleaf = Window.partitionBy("b0", "b1", "b2")
-    return df.select(
-        "vec_id",
-        (4 * F.col("b0") + 2 * F.col("b1") + F.col("b2")).cast("int")
-        .alias("leaf_id"),
-        F.count(F.lit(1)).over(wleaf).cast("long").alias("leaf_count"))
-
-
-_HL_SQL = """
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS xc,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS xp
-  FROM events GROUP BY 1
-), diffs AS (
-  SELECT a.xc - b.xp AS diff, a.day AS da, b.day AS db
-  FROM d a CROSS JOIN d b
-), ranked AS (
-  SELECT diff, row_number() OVER (ORDER BY diff, da, db) AS rn,
-         count(*) OVER () AS n
-  FROM diffs
-)
-SELECT CAST((SELECT count(*) FROM d) AS BIGINT) AS n_days,
-       CAST(max(n) AS BIGINT) AS n_pairs,
-       CAST(max(CASE WHEN rn = (n + 1) // 2 THEN diff END) AS BIGINT)
-           AS hl_lower,
-       CAST(max(CASE WHEN rn = n // 2 + 1 THEN diff END) AS BIGINT)
-           AS hl_upper,
-       CAST(max(CASE WHEN rn = (n + 1) // 2 THEN diff END)
-            + max(CASE WHEN rn = n // 2 + 1 THEN diff END) AS BIGINT)
-           AS hl_x2
-FROM ranked
-"""
-
-
-@register("q_events_hodges_lehmann", _HL_SQL)
-def q_events_hodges_lehmann(spark, sf_dir):
-    """Hodges-Lehmann shift estimator (1963) between daily click and
-    purchase volumes — the robust location-difference companion of
-    q_events_mann_whitney: the median of ALL n² cross differences
-    xᵢ−yⱼ. Both middle order statistics are emitted exactly (their sum
-    hl_x2 is the classic even-n estimator ×2, kept integral rather than
-    halved into a float); selection is rank-exact under the (diff, dayₐ,
-    day_b) total order. The cross-difference set is a single flat join +
-    one ranking — the estimator stays exact at any scale because it
-    never averages, it selects."""
-    e = _t(spark, sf_dir, "events")
-    d = (e.groupBy(F.to_date("ts").alias("day"))
-         .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).cast("long").alias("xc"),
-              F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).cast("long").alias("xp")))
-    a, b = d.alias("a"), d.alias("b")
-    diffs = (a.crossJoin(b)
-             .select((F.col("a.xc") - F.col("b.xp")).alias("diff"),
-                     F.col("a.day").alias("da"),
-                     F.col("b.day").alias("db")))
-    ranked = diffs.select(
-        "diff", F.row_number().over(Window.orderBy("diff", "da", "db"))
-        .alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy(F.lit(1))).alias("n"))
-    nd = d.agg(F.count(F.lit(1)).cast("long").alias("n_days"))
-    lo = F.max(F.when(F.col("rn") == F.expr("(n + 1) div 2"),
-                      F.col("diff")))
-    hi = F.max(F.when(F.col("rn") == F.expr("n div 2 + 1"),
-                      F.col("diff")))
-    return (ranked.agg(F.max("n").cast("long").alias("n_pairs"),
-                       lo.cast("long").alias("hl_lower"),
-                       hi.cast("long").alias("hl_upper"),
-                       (lo + hi).cast("long").alias("hl_x2"))
-            .crossJoin(F.broadcast(nd))
-            .select("n_days", "n_pairs", "hl_lower", "hl_upper",
-                    "hl_x2"))
-
-
-_KENDALL_W_SQL = """
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day, event_type AS t,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), days AS (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events),
-ty AS (SELECT DISTINCT event_type AS t FROM events),
-grid AS (
-  SELECT days.day, ty.t, coalesce(d.c, 0) AS c
-  FROM days CROSS JOIN ty
-  LEFT JOIN d ON d.day = days.day AND d.t = ty.t
-), rk AS (
-  SELECT day, t,
-         CAST(row_number() OVER (PARTITION BY t ORDER BY c, day)
-              AS HUGEINT) AS r
-  FROM grid
-), tot AS (
-  SELECT day, sum(r) AS rsum FROM rk GROUP BY 1
-), dims AS (
-  SELECT (SELECT CAST(count(*) AS HUGEINT) FROM ty) AS m,
-         (SELECT CAST(count(*) AS HUGEINT) FROM days) AS n
-), s AS (
-  SELECT sum((2 * tot.rsum - dims.m * (dims.n + 1))
-             * (2 * tot.rsum - dims.m * (dims.n + 1))) AS s4
-  FROM tot, dims GROUP BY dims.m, dims.n
-)
-SELECT CAST(dims.m AS BIGINT) AS n_judges,
-       CAST(dims.n AS BIGINT) AS n_days,
-       CAST(s.s4 AS BIGINT) AS s_x4,
-       CAST(s.s4 * 1000000
-            // (dims.m * dims.m * (dims.n * dims.n * dims.n - dims.n))
-           AS BIGINT) AS w_x3_e6,
-       round(3.0 * s.s4 / (CAST(dims.m AS DOUBLE) * CAST(dims.m
-                  AS DOUBLE) * (CAST(dims.n AS DOUBLE) ** 3
-                  - CAST(dims.n AS DOUBLE))), 6) AS w
-FROM s, dims
-"""
-
-
-@register("q_events_kendall_w", _KENDALL_W_SQL)
-def q_events_kendall_w(spark, sf_dir):
-    """Kendall's coefficient of concordance (Kendall & Babington Smith
-    1939): do the five event types, as judges ranking the days by their
-    own daily volumes, agree? W = 12S / (m²(n³−n)) with S = Σ(Rⱼ −
-    m(n+1)/2)². Computed via the half-integer-free identity 4S = Σ(2Rⱼ
-    − m(n+1))² — an exact integer (s_x4), with w_x3_e6 = 3·4S·1e6 //
-    (4·m²(n³−n)) pinned as a floor division and the conventional W as
-    the one round-6 float. Per-judge ranks use the (count, day) total
-    order (deterministic tie policy, documented in place of midranks).
-    The inter-rater statistic for RANKINGS, complementing the
-    categorical kappas (q_docs_cohen_kappa / q_docs_fleiss_kappa)."""
-    e = _t(spark, sf_dir, "events")
-    d = (e.groupBy(F.to_date("ts").alias("day"),
-                   F.col("event_type").alias("t"))
-         .agg(F.count(F.lit(1)).alias("c")))
-    days = e.select(F.to_date("ts").alias("day")).distinct()
-    ty = e.select(F.col("event_type").alias("t")).distinct()
-    grid = (days.crossJoin(ty).join(d, ["day", "t"], "left")
-            .select("day", "t",
-                    F.coalesce("c", F.lit(0)).alias("c")))
-    rk = grid.select("day", "t",
-                     F.row_number().over(
-                         Window.partitionBy("t").orderBy("c", "day"))
-                     .cast("decimal(38,0)").alias("r"))
-    tot = rk.groupBy("day").agg(F.sum("r").alias("rsum"))
-    dims = (ty.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("m"))
-            .crossJoin(days.agg(F.count(F.lit(1)).cast("decimal(38,0)")
-                                .alias("n"))))
-    dev = 2 * F.col("rsum") - F.col("m") * (F.col("n") + 1)
-    s = (tot.crossJoin(F.broadcast(dims))
-         .agg(F.sum(dev * dev).alias("s4"),
-              F.first("m").alias("m"), F.first("n").alias("n")))
-    md = F.col("m").cast("double")
-    ndd = F.col("n").cast("double")
-    return s.select(
-        F.col("m").cast("long").alias("n_judges"),
-        F.col("n").cast("long").alias("n_days"),
-        F.col("s4").cast("long").alias("s_x4"),
-        F.expr("CAST(s4 * 1000000 div (m * m * (n * n * n - n))"
-               " AS BIGINT)").alias("w_x3_e6"),
-        F.round(3.0 * F.col("s4").cast("double")
-                / (md * md * (F.pow(ndd, 3) - ndd)), 6).alias("w"))
-
-
-def _bencode_fixture_sql(n: int = 36, seed: int = 42) -> str:
-    """Oracle for the bencode walk: every manifest column re-derived from
-    the pure torrent_spec formulas — a length-prefix slip, a missed
-    sorted-key check or an integer-rule violation flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.bencodefile import (
-        torrent_spec,
-    )
-    rows = []
-    for i in range(n):
-        s = torrent_spec(i, seed)
-        rows.append(
-            f"({i}, '{s['announce']}', '{s['name']}',"
-            f" {s['piece_length']}, {s['length']}, {s['n_pieces']},"
-            f" {len(s['trackers'])}, {s['creation_date']},"
-            f" '{_h.md5(s['pieces']).hexdigest()}')")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id, announce, name,"
-        " CAST(piece_length AS BIGINT) AS piece_length,"
-        " CAST(total_length AS BIGINT) AS total_length,"
-        " CAST(n_pieces AS INTEGER) AS n_pieces,"
-        " CAST(n_trackers AS INTEGER) AS n_trackers,"
-        " CAST(creation_date AS BIGINT) AS creation_date, pieces_md5"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, announce, name, piece_length, total_length,"
-        " n_pieces, n_trackers, creation_date, pieces_md5)")
-
-
-@register("multimodal_bencode_torrents", _bencode_fixture_sql())
-def multimodal_bencode_torrents(spark, sf_dir):
-    """BitTorrent metainfo manifest via the HAND-ROLLED bencode walk
-    (sources/bencodefile.torrent_manifest, BEP-3): recursive-descent
-    decode of i…e integers (leading-zero and -0 forms rejected),
-    length-prefixed byte strings, lists and dictionaries with the
-    CANONICAL sorted-key rule ENFORCED (info-dict hashing depends on
-    it, so unsorted input is an error, not a shrug), plus the
-    20-byte-multiple pieces invariant. The peer-to-peer distribution
-    metadata surface: one mapInPandas over the binary column, fully
-    distributed."""
-    from .sources.bencodefile import synthetic_torrents, torrent_manifest
-    return torrent_manifest(synthetic_torrents(spark, 36))
-
-
 _VOTERANK_SQL = """
 WITH RECURSIVE m AS MATERIALIZED (
   SELECT DISTINCT d.doc_id, lex.term
@@ -32164,2711 +7313,6 @@ def kg_voterank_docs(spark, sf_dir):
     from .operators.graph_algos import voterank
     return voterank(_cooc_edges(spark, sf_dir), rounds=5,
                     src="term_a", dst="term_b")
-
-
-_EG_SQL = """
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS HUGEINT) AS x,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS HUGEINT) AS y
-  FROM events GROUP BY 1
-), s1 AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS sx, sum(y) AS sy,
-         sum(x * x) AS sxx, sum(x * y) AS sxy
-  FROM d
-), cr AS (
-  SELECT n, n * sxx - sx * sx AS det1,
-         n * sxy - sx * sy AS bnum,
-         sxx * sy - sx * sxy AS anum
-  FROM s1
-), u AS (
-  SELECT d.day,
-         CASE WHEN cr.det1 * d.y - cr.bnum * d.x - cr.anum >= 0
-              THEN (cr.det1 * d.y - cr.bnum * d.x - cr.anum) * 100
-                   // cr.det1
-              ELSE -((-(cr.det1 * d.y - cr.bnum * d.x - cr.anum)) * 100
-                     // cr.det1) END AS ue2
-  FROM d, cr
-), lagd AS (
-  SELECT ue2 AS y, lag(ue2) OVER (ORDER BY day) AS y1,
-         lag(ue2, 2) OVER (ORDER BY day) AS y2
-  FROM u
-), obs AS (
-  SELECT y - y1 AS z, y1 AS yl, y1 - y2 AS dl
-  FROM lagd WHERE y2 IS NOT NULL
-), g AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n,
-         sum(z) AS sz, sum(yl) AS sy, sum(dl) AS sd,
-         sum(z * z) AS szz, sum(yl * yl) AS syy, sum(dl * dl) AS sdd,
-         sum(z * yl) AS szy, sum(z * dl) AS szd, sum(yl * dl) AS syd
-  FROM obs
-), c AS (
-  SELECT n,
-         n * syy - sy * sy AS cyy, n * sdd - sd * sd AS cdd,
-         n * syd - sy * sd AS cyd, n * szy - sz * sy AS czy,
-         n * szd - sz * sd AS czd, n * szz - sz * sz AS czz
-  FROM g
-), k AS (
-  SELECT n, cdd,
-         cyy * cdd - cyd * cyd AS det,
-         czy * cdd - czd * cyd AS nb,
-         czz * (cyy * cdd - cyd * cyd)
-           - (czy * cdd - czd * cyd) * czy
-           - (czd * cyy - czy * cyd) * czd AS r
-  FROM c
-)
-SELECT CAST(cr.n AS BIGINT) AS n_days,
-       CAST(CASE WHEN cr.det1 = 0 THEN NULL
-                 WHEN cr.bnum >= 0 THEN cr.bnum * 1000000 // cr.det1
-                 ELSE -((-cr.bnum) * 1000000 // cr.det1) END AS BIGINT)
-           AS coint_beta_e6,
-       CAST(CASE WHEN cr.det1 = 0 THEN NULL
-                 WHEN cr.anum >= 0 THEN cr.anum * 1000000 // cr.det1
-                 ELSE -((-cr.anum) * 1000000 // cr.det1) END AS BIGINT)
-           AS coint_alpha_e6,
-       CAST(CASE WHEN k.det = 0 THEN NULL
-                 WHEN k.nb >= 0 THEN k.nb * 1000000 // k.det
-                 ELSE -((-k.nb) * 1000000 // k.det) END AS BIGINT)
-           AS eg_gamma_e6,
-       CAST(CASE WHEN k.det = 0 OR k.r = 0 OR k.cdd = 0 THEN NULL
-                 ELSE (CASE WHEN k.nb >= 0 THEN 1 ELSE -1 END)
-                      * CAST(floor(1000000.0
-                          * sqrt((CAST(k.nb AS DOUBLE)
-                                  * CAST(k.nb AS DOUBLE)
-                                  * CAST(k.n - 3 AS DOUBLE))
-                                 / (CAST(k.r AS DOUBLE)
-                                    * CAST(k.cdd AS DOUBLE))))
-                        AS HUGEINT)
-            END AS BIGINT) AS eg_t_e6
-FROM cr, k
-"""
-
-
-@register("q_events_engle_granger", _EG_SQL)
-def q_events_engle_granger(spark, sf_dir):
-    """Engle-Granger two-step cointegration test (Engle & Granger 1987,
-    Nobel 2003) between daily click and purchase volumes: stage 1 is
-    the Cramer-exact cointegrating regression y = α + βx (integer det /
-    numerators, e6 sign-floored), stage 2 runs the q_events_adf_test
-    machinery on the stage-1 residuals held in e2 integer fixed point —
-    valid because the DF t-statistic is SCALE-INVARIANT, so flooring
-    the residual scale changes nothing but keeps every cross-product
-    inside int128 (the documented overflow budget: ~1e33 ≪ 2¹²⁷). A
-    strongly negative eg_t says the two series share a common
-    stochastic trend — the spurious-regression guard every
-    metric-on-metric regression needs. Identical sign-handled floor
-    divisions on both engines; singular systems yield NULL."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d = (e.groupBy(F.col("ts").cast("date").alias("day"))
-         .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).cast(dec).alias("x"),
-              F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).cast(dec).alias("y")))
-    s1 = d.agg(F.count(F.lit(1)).cast(dec).alias("n"),
-               F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-               F.sum(F.col("x") * F.col("x")).alias("sxx"),
-               F.sum(F.col("x") * F.col("y")).alias("sxy"))
-    cr = s1.select(
-        "n", (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-        .alias("det1"),
-        (F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy"))
-        .alias("bnum"),
-        (F.col("sxx") * F.col("sy") - F.col("sx") * F.col("sxy"))
-        .alias("anum"))
-    u = (d.crossJoin(F.broadcast(cr))
-         .select("day", F.expr(
-             "CASE WHEN det1 * y - bnum * x - anum >= 0"
-             " THEN (det1 * y - bnum * x - anum) * 100 div det1"
-             " ELSE -((-(det1 * y - bnum * x - anum)) * 100 div det1)"
-             " END").cast(dec).alias("ue2")))
-    w = Window.orderBy("day")
-    lagd = u.select(F.col("ue2").alias("y"),
-                    F.lag("ue2").over(w).alias("y1"),
-                    F.lag("ue2", 2).over(w).alias("y2"))
-    obs = (lagd.filter(F.col("y2").isNotNull())
-           .select((F.col("y") - F.col("y1")).alias("z"),
-                   F.col("y1").alias("yl"),
-                   (F.col("y1") - F.col("y2")).alias("dl")))
-    g = obs.agg(
-        F.count(F.lit(1)).cast(dec).alias("n"),
-        F.sum("z").alias("sz"), F.sum("yl").alias("sy"),
-        F.sum("dl").alias("sd"),
-        F.sum(F.col("z") * F.col("z")).alias("szz"),
-        F.sum(F.col("yl") * F.col("yl")).alias("syy"),
-        F.sum(F.col("dl") * F.col("dl")).alias("sdd"),
-        F.sum(F.col("z") * F.col("yl")).alias("szy"),
-        F.sum(F.col("z") * F.col("dl")).alias("szd"),
-        F.sum(F.col("yl") * F.col("dl")).alias("syd"))
-    c = g.select(
-        "n", (F.col("n") * F.col("syy") - F.col("sy") * F.col("sy"))
-        .alias("cyy"),
-        (F.col("n") * F.col("sdd") - F.col("sd") * F.col("sd"))
-        .alias("cdd"),
-        (F.col("n") * F.col("syd") - F.col("sy") * F.col("sd"))
-        .alias("cyd"),
-        (F.col("n") * F.col("szy") - F.col("sz") * F.col("sy"))
-        .alias("czy"),
-        (F.col("n") * F.col("szd") - F.col("sz") * F.col("sd"))
-        .alias("czd"),
-        (F.col("n") * F.col("szz") - F.col("sz") * F.col("sz"))
-        .alias("czz"))
-    k = c.select(
-        F.col("n").alias("kn"), "cdd",
-        (F.col("cyy") * F.col("cdd") - F.col("cyd") * F.col("cyd"))
-        .alias("det"),
-        (F.col("czy") * F.col("cdd") - F.col("czd") * F.col("cyd"))
-        .alias("nb"),
-        (F.col("czz") * (F.col("cyy") * F.col("cdd")
-                         - F.col("cyd") * F.col("cyd"))
-         - (F.col("czy") * F.col("cdd") - F.col("czd") * F.col("cyd"))
-         * F.col("czy")
-         - (F.col("czd") * F.col("cyy") - F.col("czy") * F.col("cyd"))
-         * F.col("czd")).alias("r"))
-
-    def sfloor(numc, denc, scale):
-        return F.expr(f"CASE WHEN {denc} = 0 THEN NULL"
-                      f" WHEN {numc} >= 0"
-                      f" THEN CAST({numc} * {scale} div {denc} AS BIGINT)"
-                      f" ELSE CAST(-((-{numc}) * {scale} div {denc})"
-                      f" AS BIGINT) END")
-
-    return (cr.crossJoin(F.broadcast(k))
-            .select(F.col("n").cast("long").alias("n_days"),
-                    sfloor("bnum", "det1", 1000000)
-                    .alias("coint_beta_e6"),
-                    sfloor("anum", "det1", 1000000)
-                    .alias("coint_alpha_e6"),
-                    sfloor("nb", "det", 1000000).alias("eg_gamma_e6"),
-                    F.expr(
-                        "CASE WHEN det = 0 OR r = 0 OR cdd = 0 THEN NULL"
-                        " ELSE CAST((CASE WHEN nb >= 0 THEN 1 ELSE -1"
-                        " END) * CAST(floor(1000000.0 * sqrt("
-                        " (CAST(nb AS DOUBLE) * CAST(nb AS DOUBLE)"
-                        "  * CAST(kn - 3 AS DOUBLE))"
-                        " / (CAST(r AS DOUBLE) * CAST(cdd AS DOUBLE))))"
-                        " AS DECIMAL(38,0)) AS BIGINT) END")
-                    .alias("eg_t_e6")))
-
-
-def _pcap_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the pcap walk: re-derived from the pure pcap_file_spec
-    formulas — an endianness mixup (LE record headers vs BE IP fields),
-    a missed checksum verification or a UDP length slip flips the
-    hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.pcapfile import (
-        pcap_file_spec,
-    )
-    rows = []
-    for i in range(n):
-        spec = pcap_file_spec(i, seed)
-        joined = b"|".join(p["payload"] for p in spec)
-        rows.append(
-            f"({i}, {len(spec)}, {len(spec)},"
-            f" {sum(1 for p in spec if p['corrupt'])},"
-            f" {len({'.'.join(str(b) for b in p['src']) for p in spec})},"
-            f" {sum(len(p['payload']) for p in spec)},"
-            f" '{_h.md5(joined).hexdigest()}',"
-            f" {max(p['ts_usec'] for p in spec)})")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id,"
-        " CAST(n_packets AS INTEGER) AS n_packets,"
-        " CAST(n_udp AS INTEGER) AS n_udp,"
-        " CAST(n_bad_checksum AS INTEGER) AS n_bad_checksum,"
-        " CAST(n_src_ips AS INTEGER) AS n_src_ips,"
-        " CAST(total_payload_bytes AS BIGINT) AS total_payload_bytes,"
-        " payload_md5, CAST(max_ts_usec AS BIGINT) AS max_ts_usec"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, n_packets, n_udp, n_bad_checksum, n_src_ips,"
-        " total_payload_bytes, payload_md5, max_ts_usec)")
-
-
-@register("multimodal_pcap_packets", _pcap_fixture_sql())
-def multimodal_pcap_packets(spark, sf_dir):
-    """PCAP capture manifest via the HAND-ROLLED packet walk
-    (sources/pcapfile.pcap_manifest): the little-endian libpcap global
-    and record headers AROUND big-endian IPv4/UDP fields (the classic
-    endianness trap), LINKTYPE_RAW dispatch, per-packet RFC 1071
-    ones-complement header-checksum VERIFICATION (every 6th packet is
-    deliberately corrupted, so the failure path is part of the pinned
-    result), UDP/IP length cross-checks, and honest refusal of
-    byte-swapped magics and unknown linktypes. The network-telemetry
-    ingestion surface: one mapInPandas over the binary column, fully
-    distributed."""
-    from .sources.pcapfile import pcap_manifest, synthetic_pcaps
-    return pcap_manifest(synthetic_pcaps(spark, 30))
-
-
-_DEGEN_SQL = """
-WITH RECURSIVE m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {lex}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= {min_cooc}
-), nodes AS (
-  SELECT DISTINCT term FROM (SELECT a AS term FROM e
-                             UNION SELECT b FROM e)
-), ty AS (
-  SELECT term, CAST(row_number() OVER (ORDER BY term) AS INTEGER) AS ti
-  FROM nodes
-), adjp AS (
-  SELECT x.ti AS i, y.ti AS j,
-         CAST(CASE WHEN EXISTS (
-           SELECT 1 FROM e WHERE (e.a = x.term AND e.b = y.term)
-                              OR (e.a = y.term AND e.b = x.term))
-         THEN 1 ELSE 0 END AS BIGINT) AS v
-  FROM ty x, ty y
-), consts AS (
-  SELECT (SELECT list(l ORDER BY i) FROM (
-            SELECT i, list(v ORDER BY j) AS l FROM adjp GROUP BY i) q)
-      AS nn,
-         (SELECT CAST(count(*) AS INTEGER) FROM ty) AS k
-), st AS (
-  SELECT 0 AS it, 0 AS phase, 0 AS sel, CAST(0 AS BIGINT) AS seldeg,
-         CAST(0 AS BIGINT) AS cm,
-         list_transform(range(1, c.k + 1), i -> 0) AS mask,
-         c.nn AS nn, c.k AS k
-  FROM consts c
-  UNION ALL
-  SELECT s.it + 1, 1 - s.phase,
-         CASE WHEN s.phase = 0 THEN CAST(list_position(
-           list_transform(range(1, s.k + 1), i -> CASE
-             WHEN s.mask[i] = 1 THEN CAST(s.k + 1 AS BIGINT)
-             ELSE list_sum(list_transform(range(1, s.k + 1),
-                  j -> s.nn[i][j] * (1 - s.mask[j]))) END),
-           list_min(
-           list_transform(range(1, s.k + 1), i -> CASE
-             WHEN s.mask[i] = 1 THEN CAST(s.k + 1 AS BIGINT)
-             ELSE list_sum(list_transform(range(1, s.k + 1),
-                  j -> s.nn[i][j] * (1 - s.mask[j]))) END)))
-           AS INTEGER)
-         ELSE s.sel END AS sel2,
-         CASE WHEN s.phase = 0 THEN list_min(
-           list_transform(range(1, s.k + 1), i -> CASE
-             WHEN s.mask[i] = 1 THEN CAST(s.k + 1 AS BIGINT)
-             ELSE list_sum(list_transform(range(1, s.k + 1),
-                  j -> s.nn[i][j] * (1 - s.mask[j]))) END))
-         ELSE s.seldeg END AS seldeg2,
-         CASE WHEN s.phase = 0 THEN s.cm
-              ELSE greatest(s.cm, s.seldeg) END AS cm2,
-         CASE WHEN s.phase = 0 THEN s.mask ELSE
-           list_transform(range(1, s.k + 1),
-                          i -> CASE WHEN i = s.sel THEN 1
-                               ELSE s.mask[i] END) END AS mask2,
-         s.nn, s.k
-  FROM st s
-  WHERE s.it < 2 * s.k
-)
-SELECT CAST((s.it + 1) // 2 AS INTEGER) AS peel_order, ty.term AS node,
-       s.seldeg AS degree_at_removal,
-       greatest(s.cm, s.seldeg) AS core_number
-FROM st s JOIN ty ON ty.ti = s.sel
-WHERE s.phase = 1
-"""
-
-
-@register("kg_degeneracy_docs",
-          _DEGEN_SQL.format(lex=kg_docs.lexicon_values_sql(),
-                            min_cooc=kg_docs.MIN_COOCCURRENCES))
-def kg_degeneracy_docs(spark, sf_dir):
-    """Degeneracy ordering + core numbers (Matula & Beck 1983, the
-    smallest-last ordering behind linear-time coloring and the k-core
-    decomposition): repeatedly remove the minimum-residual-degree node
-    (ties to the lexicographically smallest term); each node's core
-    number is the running maximum of removal degrees at its turn, and
-    the overall maximum is the graph's degeneracy — the quantity that
-    bounds greedy-coloring (χ ≤ d+1) and drives clique-enumeration
-    orderings. Complements the fixed-k kg_kcore_docs with the FULL
-    per-node decomposition. The peel is inherently sequential, so the
-    engine replays it over the bounded vocabulary projection (the
-    Viterbi discipline) while the oracle replays the identical
-    elect/remove two-phase list recursion."""
-    from .operators.kg_docs import MIN_COOCCURRENCES
-    edges = _cooc_edges(spark, sf_dir, MIN_COOCCURRENCES)
-    rows = edges.select("term_a", "term_b").collect()
-    adj: dict[str, set] = {}
-    for r in rows:
-        adj.setdefault(r["term_a"], set()).add(r["term_b"])
-        adj.setdefault(r["term_b"], set()).add(r["term_a"])
-    nodes = sorted(adj)
-    removed: set[str] = set()
-    cm = 0
-    out = []
-    for order in range(1, len(nodes) + 1):
-        live = [(len(adj[v] - removed), v) for v in nodes
-                if v not in removed]
-        deg, sel = min(live)
-        cm = max(cm, deg)
-        out.append((order, sel, deg, cm))
-        removed.add(sel)
-    return spark.createDataFrame(
-        out, "peel_order int, node string, degree_at_removal long,"
-             " core_number long")
-
-
-_JT_SQL = """
-WITH v AS (
-  SELECT CAST(hour(ts) // 6 AS INTEGER) AS g, value FROM events
-), vc AS (
-  SELECT g, value, CAST(count(*) AS HUGEINT) AS c FROM v GROUP BY 1, 2
-), gl AS (SELECT DISTINCT g FROM v),
-pairsdef AS (
-  SELECT a.g AS ga, b.g AS gb FROM gl a JOIN gl b ON a.g < b.g
-), pv AS (
-  SELECT p.ga, p.gb, vc.value,
-         sum(CASE WHEN vc.g = p.ga THEN vc.c ELSE 0 END) AS ca,
-         sum(CASE WHEN vc.g = p.gb THEN vc.c ELSE 0 END) AS cb
-  FROM pairsdef p JOIN vc ON vc.g IN (p.ga, p.gb)
-  GROUP BY 1, 2, 3
-), cum AS (
-  SELECT ga, gb, ca, cb,
-         sum(ca) OVER (PARTITION BY ga, gb ORDER BY value) AS cum_ca
-  FROM pv
-), gs AS (
-  SELECT g, CAST(count(*) AS HUGEINT) AS n FROM v GROUP BY 1
-), tot AS (
-  SELECT CAST(sum(cb * (2 * (cum_ca - ca) + ca)) AS HUGEINT) AS j2,
-         (SELECT sum(a.n * b.n) FROM gs a JOIN gs b ON a.g < b.g)
-             AS npairs
-  FROM cum
-)
-SELECT CAST((SELECT count(*) FROM gs) AS INTEGER) AS n_groups,
-       CAST(npairs AS BIGINT) AS n_pairs,
-       CAST(j2 AS BIGINT) AS jt_x2,
-       CAST(j2 * 1000000 // (2 * npairs) AS BIGINT) AS jt_norm_e6
-FROM tot
-"""
-
-
-@register("q_events_jonckheere", _JT_SQL)
-def q_events_jonckheere(spark, sf_dir):
-    """Jonckheere-Terpstra ordered-alternative trend test (1954):
-    do event values rise across the four ordered six-hour day parts?
-    J = Σ over group pairs g<h of #{x_g < y_h}, kept integral in
-    doubled units (ties count 1, strict 2) — every comparison is exact,
-    no normal approximation is taken, and jt_norm_e6 = 2J·1e6 //
-    (2·Σnₐn_b) pins the (0,1)-normalized trend strength as a floor
-    division. The ordered-groups complement of the unordered
-    q_events_kruskal_wallis. NEVER an all-pairs join: per-pair counts
-    collapse to the value level and a running prefix sum supplies the
-    strictly-below mass (Σ c_h·(2·below_g + ties_g)), so the whole test
-    is one value aggregate + one window per group pair — O(n log n) at
-    any scale."""
-    e = _t(spark, sf_dir, "events")
-    v = e.select((F.hour("ts") / 6).cast("int").alias("g"), "value")
-    vc = (v.groupBy("g", "value")
-          .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("c")))
-    gl = v.select("g").distinct()
-    pairsdef = (gl.alias("x").join(gl.alias("y"),
-                                   F.col("x.g") < F.col("y.g"))
-                .select(F.col("x.g").alias("ga"),
-                        F.col("y.g").alias("gb")))
-    pv = (F.broadcast(pairsdef).join(
-        vc, (vc.g == F.col("ga")) | (vc.g == F.col("gb")))
-        .groupBy("ga", "gb", "value")
-        .agg(F.sum(F.when(F.col("g") == F.col("ga"), F.col("c"))
-                   .otherwise(0)).alias("ca"),
-             F.sum(F.when(F.col("g") == F.col("gb"), F.col("c"))
-                   .otherwise(0)).alias("cb")))
-    wcum = Window.partitionBy("ga", "gb").orderBy("value")
-    cum = pv.select("ca", "cb", F.sum("ca").over(wcum).alias("cum_ca"))
-    gs = v.groupBy("g").agg(F.count(F.lit(1)).cast("decimal(38,0)")
-                            .alias("n"))
-    ga, gb = gs.alias("ga"), gs.alias("gb")
-    npairs = (ga.join(gb, F.col("ga.g") < F.col("gb.g"))
-              .agg(F.sum(F.col("ga.n") * F.col("gb.n")).alias("npairs")))
-    j2 = cum.agg(F.sum(F.col("cb") * (2 * (F.col("cum_ca")
-                                           - F.col("ca"))
-                                      + F.col("ca")))
-                 .cast("decimal(38,0)").alias("j2"))
-    ng = gs.agg(F.count(F.lit(1)).cast("int").alias("n_groups"))
-    return (j2.crossJoin(F.broadcast(npairs)).crossJoin(F.broadcast(ng))
-            .select("n_groups",
-                    F.col("npairs").cast("long").alias("n_pairs"),
-                    F.col("j2").cast("long").alias("jt_x2"),
-                    F.expr("CAST(j2 * 1000000 div (2 * npairs)"
-                           " AS BIGINT)").alias("jt_norm_e6")))
-
-
-_PAGE_SQL = """
-WITH d AS (
-  SELECT CAST(ts AS DATE) AS day, event_type AS t,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), days AS (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events),
-ty AS (SELECT DISTINCT event_type AS t FROM events),
-grid AS (
-  SELECT days.day, ty.t, coalesce(d.c, 0) AS c
-  FROM days CROSS JOIN ty
-  LEFT JOIN d ON d.day = days.day AND d.t = ty.t
-), pred AS (
-  SELECT t, CAST(row_number() OVER (ORDER BY sum(c), t) AS HUGEINT)
-      AS ord
-  FROM grid GROUP BY t
-), rk AS (
-  SELECT g.day, g.t,
-         CAST(row_number() OVER (PARTITION BY g.day ORDER BY g.c, g.t)
-              AS HUGEINT) AS r
-  FROM grid g
-), colsum AS (
-  SELECT rk.t, pred.ord, sum(rk.r) AS rsum
-  FROM rk JOIN pred ON pred.t = rk.t GROUP BY rk.t, pred.ord
-), dims AS (
-  SELECT (SELECT CAST(count(*) AS HUGEINT) FROM ty) AS m,
-         (SELECT CAST(count(*) AS HUGEINT) FROM days) AS n
-), l AS (
-  SELECT sum(ord * rsum) AS lstat FROM colsum
-)
-SELECT c.t AS event_type, CAST(c.ord AS INTEGER) AS predicted_rank,
-       CAST(c.rsum AS BIGINT) AS rank_sum,
-       CAST(l.lstat AS BIGINT) AS page_l,
-       CAST((SELECT n * m * (m + 1) * (m + 1) // 4 FROM dims)
-            AS BIGINT) AS page_l_null_mean
-FROM colsum c, l
-"""
-
-
-@register("q_events_page_trend", _PAGE_SQL)
-def q_events_page_trend(spark, sf_dir):
-    """Page's trend test for ordered alternatives (Page 1963) across
-    repeated measures: days are blocks, the five event types are
-    treatments ranked within each day, and the predicted order is the
-    types' total-volume ranking — L = Σ ord·R_ord against its exact
-    null mean N·m(m+1)²/4. Everything is exact integer rank arithmetic
-    under the (count, type) within-block tie policy; a large L − mean
-    says the within-day rankings consistently follow the global order
-    (the ordered complement of q_events_friedman, whose statistic
-    ignores direction). Per-type rows expose each rank sum, pinning
-    the full Friedman rank table, not just L."""
-    e = _t(spark, sf_dir, "events")
-    d = (e.groupBy(F.to_date("ts").alias("day"),
-                   F.col("event_type").alias("t"))
-         .agg(F.count(F.lit(1)).alias("c")))
-    days = e.select(F.to_date("ts").alias("day")).distinct()
-    ty = e.select(F.col("event_type").alias("t")).distinct()
-    grid = (days.crossJoin(ty).join(d, ["day", "t"], "left")
-            .select("day", "t", F.coalesce("c", F.lit(0)).alias("c")))
-    pred = (grid.groupBy("t").agg(F.sum("c").alias("tot"))
-            .select("t", F.row_number().over(
-                Window.orderBy("tot", "t")).cast("decimal(38,0)")
-                .alias("ord")))
-    rk = grid.select("day", "t",
-                     F.row_number().over(
-                         Window.partitionBy("day").orderBy("c", "t"))
-                     .cast("decimal(38,0)").alias("r"))
-    colsum = (rk.join(F.broadcast(pred), "t")
-              .groupBy("t", "ord").agg(F.sum("r").alias("rsum")))
-    lstat = colsum.agg(F.sum(F.col("ord") * F.col("rsum"))
-                       .alias("lstat"))
-    dims = (ty.agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("m"))
-            .crossJoin(days.agg(F.count(F.lit(1)).cast("decimal(38,0)")
-                                .alias("n"))))
-    return (colsum.crossJoin(F.broadcast(lstat))
-            .crossJoin(F.broadcast(dims))
-            .select(F.col("t").alias("event_type"),
-                    F.col("ord").cast("int").alias("predicted_rank"),
-                    F.col("rsum").cast("long").alias("rank_sum"),
-                    F.col("lstat").cast("long").alias("page_l"),
-                    F.expr("CAST(n * m * (m + 1) * (m + 1) div 4"
-                           " AS BIGINT)")
-                    .alias("page_l_null_mean")))
-
-
-_AC_SQL = f"""
-WITH pats AS (SELECT term FROM (VALUES {{pats}}) p(term)),
-docs AS (SELECT doc_id, lower(text) AS t FROM documents),
-pos AS (
-  SELECT d.doc_id, p.term,
-         CAST(unnest(range(1, greatest(length(d.t)
-                                       - length(p.term) + 2, 1)))
-              AS INTEGER) AS i
-  FROM docs d CROSS JOIN pats p
-), hits AS (
-  SELECT pos.doc_id, pos.term
-  FROM pos JOIN docs d ON d.doc_id = pos.doc_id
-  WHERE substr(d.t, pos.i, length(pos.term)) = pos.term
-)
-SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_docs,
-       CAST(count(*) AS BIGINT) AS n_occurrences
-FROM hits GROUP BY term
-"""
-
-
-def _ac_pats_sql() -> str:
-    return ", ".join(f"('{t}')" for t, _ in kg_docs.DOC_LEXICON)
-
-
-@register("text_aho_corasick", _AC_SQL.format(pats=_ac_pats_sql()))
-def text_aho_corasick(spark, sf_dir):
-    """Multi-pattern matching via a REAL Aho-Corasick automaton (1975):
-    goto trie over the 15 lexicon terms, BFS-built failure links,
-    output sets merged through failures — one single pass over every
-    document counts ALL (overlapping) occurrences of ALL patterns
-    simultaneously, the dictionary-scan primitive behind PII screening
-    and keyword surfacing at corpus scale (15 probes per char collapse
-    to 1 transition). The automaton is built once on the driver
-    (pattern-sized work), broadcast, and run in mapInPandas; the
-    oracle brute-forces every (position, pattern) substring comparison,
-    so a wrong failure link or a dropped overlap flips the hash."""
-    import pandas as _pd
-
-    pats = [t for t, _ in kg_docs.DOC_LEXICON]
-    # build goto / fail / output (classic BFS construction)
-    goto: list[dict[str, int]] = [{}]
-    out: list[set[str]] = [set()]
-    for p in pats:
-        s = 0
-        for ch in p:
-            if ch not in goto[s]:
-                goto.append({})
-                out.append(set())
-                goto[s][ch] = len(goto) - 1
-            s = goto[s][ch]
-        out[s].add(p)
-    fail = [0] * len(goto)
-    from collections import deque
-    dq = deque(goto[0].values())
-    while dq:
-        s = dq.popleft()
-        for ch, t2 in goto[s].items():
-            dq.append(t2)
-            f = fail[s]
-            while f and ch not in goto[f]:
-                f = fail[f]
-            fail[t2] = goto[f].get(ch, 0) if goto[f].get(ch, 0) != t2 \
-                else 0
-            out[t2] |= out[fail[t2]]
-    auto = (goto, fail, [sorted(o) for o in out])
-
-    def scan(batches):
-        g, fl, ou = auto
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                s = 0
-                counts: dict[str, int] = {}
-                for ch in str(text).lower():
-                    while s and ch not in g[s]:
-                        s = fl[s]
-                    s = g[s].get(ch, 0)
-                    for p in ou[s]:
-                        counts[p] = counts.get(p, 0) + 1
-                for p, c in counts.items():
-                    rows.append({"doc_id": int(doc_id), "term": p,
-                                 "n": c})
-            yield _pd.DataFrame(rows, columns=["doc_id", "term", "n"])
-
-    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-    hits = docs.mapInPandas(scan, "doc_id long, term string, n long")
-    return (hits.groupBy("term")
-            .agg(F.count(F.lit(1)).cast("long").alias("n_docs"),
-                 F.sum("n").cast("long").alias("n_occurrences")))
-
-
-_KNEE_SQL = """
-WITH q AS (
-  SELECT embedding::DOUBLE[] AS qv FROM embeddings
-  ORDER BY vec_id LIMIT 1
-), d AS (
-  SELECT e.vec_id,
-         1.0 - list_dot_product(e.embedding::DOUBLE[], q.qv)
-           / (sqrt(list_dot_product(e.embedding::DOUBLE[],
-                                    e.embedding::DOUBLE[]))
-              * sqrt(list_dot_product(q.qv, q.qv))) AS dist
-  FROM embeddings e, q
-  WHERE e.vec_id <> (SELECT min(vec_id) FROM embeddings)
-), topk AS (
-  SELECT vec_id, dist,
-         CAST(row_number() OVER (ORDER BY dist, vec_id) AS BIGINT) AS i
-  FROM d ORDER BY dist, vec_id LIMIT 50
-), ends AS (
-  SELECT (SELECT dist FROM topk WHERE i = 1) AS d1,
-         (SELECT dist FROM topk WHERE i = 50) AS dk
-), dev AS (
-  SELECT t.i, t.vec_id, t.dist,
-         (t.dist - e.d1) * 49 - (e.dk - e.d1) * (t.i - 1) AS num
-  FROM topk t, ends e
-), mx AS (
-  SELECT min(i) AS knee_i FROM dev
-  WHERE num = (SELECT min(num) FROM dev)
-)
-SELECT d.i AS rank, d.vec_id, round(d.dist, 6) AS dist,
-       CAST(m.knee_i AS BIGINT) AS knee_rank,
-       d.i <= m.knee_i AS keep
-FROM dev d, mx m
-"""
-
-
-@register("ann_knee_cutoff", _KNEE_SQL)
-def ann_knee_cutoff(spark, sf_dir):
-    """Kneedle-style knee detection (Satopää et al. 2011) on the sorted
-    top-50 cosine-distance curve of the pinned query vector: the knee
-    is the point of maximum (signed) deviation BELOW the first-to-last
-    chord — computed as the exact cross-multiplied expression
-    (dᵢ−d₁)·(k−1) − (d_k−d₁)·(i−1), no slopes, no normalization floats
-    beyond the raw IEEE distances both engines share — giving the
-    adaptive result-set cutoff an ANN serving layer uses instead of a
-    fixed k (earliest-index tiebreak). Emits the whole ranked curve
-    with the keep/drop verdict so the hash pins every deviation, not
-    just the argmin."""
-    emb = _t(spark, sf_dir, "embeddings")
-    from .operators.similarity import cosine
-    qv = (emb.orderBy("vec_id").limit(1)
-          .select(F.col("embedding").alias("qv"),
-                  F.col("vec_id").alias("qid")))
-    d = (emb.crossJoin(F.broadcast(qv))
-         .filter(F.col("vec_id") != F.col("qid"))
-         .select("vec_id",
-                 (1.0 - cosine(F.col("embedding"), F.col("qv")))
-                 .alias("dist")))
-    topk = (d.select("vec_id", "dist",
-                     F.row_number().over(Window.orderBy("dist",
-                                                        "vec_id"))
-                     .cast("long").alias("i"))
-            .filter(F.col("i") <= 50))
-    ends = topk.agg(
-        F.first(F.when(F.col("i") == 1, F.col("dist")),
-                ignorenulls=True).alias("d1"),
-        F.first(F.when(F.col("i") == 50, F.col("dist")),
-                ignorenulls=True).alias("dk"))
-    dev = (topk.crossJoin(F.broadcast(ends))
-           .select("i", "vec_id", "dist",
-                   ((F.col("dist") - F.col("d1")) * 49
-                    - (F.col("dk") - F.col("d1")) * (F.col("i") - 1))
-                   .alias("num")))
-    mx = (dev.agg(F.min("num").alias("mn"))
-          .crossJoin(dev.select("i", "num"))
-          .filter(F.col("num") == F.col("mn"))
-          .agg(F.min("i").alias("knee_i")))
-    return (dev.crossJoin(F.broadcast(mx))
-            .select(F.col("i").alias("rank"), "vec_id",
-                    F.round("dist", 6).alias("dist"),
-                    F.col("knee_i").cast("long").alias("knee_rank"),
-                    (F.col("i") <= F.col("knee_i")).alias("keep")))
-
-
-_SW_SQL = """
-WITH RECURSIVE ds AS (
-  SELECT doc_id,
-         regexp_replace(lower(substr(text, 1, 120)), '[^a-z ]', '', 'g')
-             AS s
-  FROM documents ORDER BY doc_id LIMIT 2
-), ab AS (
-  SELECT (SELECT s FROM ds ORDER BY doc_id LIMIT 1) AS a,
-         (SELECT s FROM ds ORDER BY doc_id DESC LIMIT 1) AS b
-), dims AS (
-  SELECT a, b, CAST(length(a) AS INTEGER) AS m,
-         CAST(length(b) AS INTEGER) AS n
-  FROM ab
-), st AS (
-  SELECT 1 AS d,
-         list_transform(range(1, dims.m + 1),
-                        i -> CAST(0 AS BIGINT)) AS hd,
-         list_transform(range(1, dims.m + 1),
-                        i -> CAST(0 AS BIGINT)) AS hm1,
-         CAST(0 AS BIGINT) AS best, 0 AS best_i, 0 AS best_d,
-         CAST(0 AS BIGINT) AS npos, CAST(0 AS BIGINT) AS sumh,
-         dims.a AS a, dims.b AS b, dims.m AS m, dims.n AS n
-  FROM dims
-  UNION ALL
-  SELECT s.d + 1,
-         list_transform(range(1, s.m + 1), i -> CASE
-           WHEN i <= s.m AND s.d + 1 - i >= 1 AND s.d + 1 - i <= s.n
-           THEN greatest(CAST(0 AS BIGINT),
-             (CASE WHEN i >= 2 THEN s.hm1[i - 1] ELSE 0 END)
-               + (CASE WHEN substr(s.a, CAST(i AS INTEGER), 1)
-                          = substr(s.b, CAST(s.d + 1 - i AS INTEGER), 1)
-                  THEN 2 ELSE -1 END),
-             (CASE WHEN i >= 2 THEN s.hd[i - 1] ELSE 0 END) - 2,
-             s.hd[i] - 2)
-           ELSE CAST(0 AS BIGINT) END) AS hd2,
-         s.hd AS hm12,
-         greatest(s.best, list_max(
-           list_transform(range(1, s.m + 1), i -> CASE
-             WHEN i <= s.m AND s.d + 1 - i >= 1 AND s.d + 1 - i <= s.n
-             THEN greatest(CAST(0 AS BIGINT),
-               (CASE WHEN i >= 2 THEN s.hm1[i - 1] ELSE 0 END)
-                 + (CASE WHEN substr(s.a, CAST(i AS INTEGER), 1)
-                            = substr(s.b,
-                                     CAST(s.d + 1 - i AS INTEGER), 1)
-                    THEN 2 ELSE -1 END),
-               (CASE WHEN i >= 2 THEN s.hd[i - 1] ELSE 0 END) - 2,
-               s.hd[i] - 2)
-             ELSE CAST(0 AS BIGINT) END))) AS best2,
-         CASE WHEN list_max(
-           list_transform(range(1, s.m + 1), i -> CASE
-             WHEN i <= s.m AND s.d + 1 - i >= 1 AND s.d + 1 - i <= s.n
-             THEN greatest(CAST(0 AS BIGINT),
-               (CASE WHEN i >= 2 THEN s.hm1[i - 1] ELSE 0 END)
-                 + (CASE WHEN substr(s.a, CAST(i AS INTEGER), 1)
-                            = substr(s.b,
-                                     CAST(s.d + 1 - i AS INTEGER), 1)
-                    THEN 2 ELSE -1 END),
-               (CASE WHEN i >= 2 THEN s.hd[i - 1] ELSE 0 END) - 2,
-               s.hd[i] - 2)
-             ELSE CAST(0 AS BIGINT) END)) > s.best
-         THEN CAST(list_position(
-           list_transform(range(1, s.m + 1), i -> CASE
-             WHEN i <= s.m AND s.d + 1 - i >= 1 AND s.d + 1 - i <= s.n
-             THEN greatest(CAST(0 AS BIGINT),
-               (CASE WHEN i >= 2 THEN s.hm1[i - 1] ELSE 0 END)
-                 + (CASE WHEN substr(s.a, CAST(i AS INTEGER), 1)
-                            = substr(s.b,
-                                     CAST(s.d + 1 - i AS INTEGER), 1)
-                    THEN 2 ELSE -1 END),
-               (CASE WHEN i >= 2 THEN s.hd[i - 1] ELSE 0 END) - 2,
-               s.hd[i] - 2)
-             ELSE CAST(0 AS BIGINT) END),
-           list_max(
-           list_transform(range(1, s.m + 1), i -> CASE
-             WHEN i <= s.m AND s.d + 1 - i >= 1 AND s.d + 1 - i <= s.n
-             THEN greatest(CAST(0 AS BIGINT),
-               (CASE WHEN i >= 2 THEN s.hm1[i - 1] ELSE 0 END)
-                 + (CASE WHEN substr(s.a, CAST(i AS INTEGER), 1)
-                            = substr(s.b,
-                                     CAST(s.d + 1 - i AS INTEGER), 1)
-                    THEN 2 ELSE -1 END),
-               (CASE WHEN i >= 2 THEN s.hd[i - 1] ELSE 0 END) - 2,
-               s.hd[i] - 2)
-             ELSE CAST(0 AS BIGINT) END))) AS INTEGER)
-         ELSE s.best_i END AS best_i2,
-         CASE WHEN list_max(
-           list_transform(range(1, s.m + 1), i -> CASE
-             WHEN i <= s.m AND s.d + 1 - i >= 1 AND s.d + 1 - i <= s.n
-             THEN greatest(CAST(0 AS BIGINT),
-               (CASE WHEN i >= 2 THEN s.hm1[i - 1] ELSE 0 END)
-                 + (CASE WHEN substr(s.a, CAST(i AS INTEGER), 1)
-                            = substr(s.b,
-                                     CAST(s.d + 1 - i AS INTEGER), 1)
-                    THEN 2 ELSE -1 END),
-               (CASE WHEN i >= 2 THEN s.hd[i - 1] ELSE 0 END) - 2,
-               s.hd[i] - 2)
-             ELSE CAST(0 AS BIGINT) END)) > s.best
-         THEN s.d + 1 ELSE s.best_d END AS best_d2,
-         s.npos + list_sum(
-           list_transform(range(1, s.m + 1), i -> CASE
-             WHEN (CASE
-               WHEN i <= s.m AND s.d + 1 - i >= 1 AND s.d + 1 - i <= s.n
-               THEN greatest(CAST(0 AS BIGINT),
-                 (CASE WHEN i >= 2 THEN s.hm1[i - 1] ELSE 0 END)
-                   + (CASE WHEN substr(s.a, CAST(i AS INTEGER), 1)
-                              = substr(s.b,
-                                       CAST(s.d + 1 - i AS INTEGER), 1)
-                      THEN 2 ELSE -1 END),
-                 (CASE WHEN i >= 2 THEN s.hd[i - 1] ELSE 0 END) - 2,
-                 s.hd[i] - 2)
-               ELSE CAST(0 AS BIGINT) END) > 0
-             THEN 1 ELSE 0 END)) AS npos2,
-         s.sumh + list_sum(
-           list_transform(range(1, s.m + 1), i -> CASE
-             WHEN i <= s.m AND s.d + 1 - i >= 1 AND s.d + 1 - i <= s.n
-             THEN greatest(CAST(0 AS BIGINT),
-               (CASE WHEN i >= 2 THEN s.hm1[i - 1] ELSE 0 END)
-                 + (CASE WHEN substr(s.a, CAST(i AS INTEGER), 1)
-                            = substr(s.b,
-                                     CAST(s.d + 1 - i AS INTEGER), 1)
-                    THEN 2 ELSE -1 END),
-               (CASE WHEN i >= 2 THEN s.hd[i - 1] ELSE 0 END) - 2,
-               s.hd[i] - 2)
-             ELSE CAST(0 AS BIGINT) END)) AS sumh2,
-         s.a, s.b, s.m, s.n
-  FROM st s WHERE s.d < s.m + s.n
-)
-SELECT CAST(m AS INTEGER) AS len_a, CAST(n AS INTEGER) AS len_b,
-       best AS best_score, CAST(best_i AS INTEGER) AS end_i,
-       CAST(best_d - best_i AS INTEGER) AS end_j,
-       npos AS n_positive_cells, sumh AS sum_h
-FROM st ORDER BY d DESC LIMIT 1
-"""
-
-
-@register("text_smith_waterman", _SW_SQL)
-def text_smith_waterman(spark, sf_dir):
-    """Smith-Waterman local alignment (1981) between the cleaned
-    120-char prefixes of the two lexicographically-first documents:
-    match +2 / mismatch −1 / gap −2, scores floored at 0 — the LOCAL
-    complement of the global edit-distance family
-    (dedup_edit_distance_docs), finding the best-matching substring
-    pair rather than whole-string cost. All-integer DP; the best
-    score, its end cell (earliest diagonal then smallest row on ties),
-    the count of positive cells and the total alignment mass are
-    pinned. Engine: bounded driver DP (Viterbi discipline); oracle:
-    the DTW-style anti-diagonal wavefront recursion — two carried
-    diagonals, so each recursion step is one list_transform with no
-    intra-step dependency (exactly how a genuinely large alignment
-    would distribute)."""
-    docs = (_t(spark, sf_dir, "documents").orderBy("doc_id").limit(2)
-            .select("doc_id", "text").collect())
-    import re as _re
-
-    def clean(t):
-        return _re.sub(r"[^a-z ]", "", t[:120].lower())
-
-    a = clean(docs[0]["text"])
-    b = clean(docs[1]["text"])
-    m, n = len(a), len(b)
-    npos = 0
-    sumh = 0
-    rows = [[0] * (n + 1) for _ in range(m + 1)]
-    for i in range(1, m + 1):
-        for j in range(1, n + 1):
-            sub = 2 if a[i - 1] == b[j - 1] else -1
-            h = max(0, rows[i - 1][j - 1] + sub, rows[i - 1][j] - 2,
-                    rows[i][j - 1] - 2)
-            rows[i][j] = h
-            if h > 0:
-                npos += 1
-            sumh += h
-    # earliest-diagonal tiebreak (matches the oracle's ascending-d,
-    # strictly-greater update with first-max-position within a diagonal)
-    best = best_i = best_j = 0
-    for d in range(2, m + n + 1):
-        diag_best = 0
-        diag_i = 0
-        for i in range(max(1, d - n), min(m, d - 1) + 1):
-            h = rows[i][d - i]
-            if h > diag_best:
-                diag_best, diag_i = h, i
-        if diag_best > best:
-            best, best_i, best_j = diag_best, diag_i, d - diag_i
-    out = [(m, n, best, best_i, best_j, npos, sumh)]
-    return spark.createDataFrame(
-        out, "len_a int, len_b int, best_score long, end_i int,"
-             " end_j int, n_positive_cells long, sum_h long")
-
-
-_CAPTURE_SQL = """
-WITH half AS (
-  SELECT user_id,
-         CAST(CAST(ts AS DATE)
-              > (SELECT min(CAST(ts AS DATE))
-                 + CAST((max(CAST(ts AS DATE))
-                         - min(CAST(ts AS DATE))) // 2 AS INTEGER)
-                 FROM events) AS INTEGER) AS h
-  FROM events
-), s AS (
-  SELECT
-    (SELECT count(DISTINCT user_id) FROM half WHERE h = 0) AS n1,
-    (SELECT count(DISTINCT user_id) FROM half WHERE h = 1) AS n2,
-    (SELECT count(*) FROM
-       (SELECT DISTINCT user_id FROM half WHERE h = 0) a
-       JOIN (SELECT DISTINCT user_id FROM half WHERE h = 1) b
-       USING (user_id)) AS m,
-    (SELECT count(DISTINCT user_id) FROM half) AS truth
-)
-SELECT CAST(n1 AS BIGINT) AS n_first_half,
-       CAST(n2 AS BIGINT) AS n_second_half,
-       CAST(m AS BIGINT) AS n_recaptured,
-       CAST(truth AS BIGINT) AS true_distinct,
-       CAST(CASE WHEN m > 0 THEN n1 * n2 // m END AS BIGINT)
-           AS lincoln_petersen,
-       CAST((n1 + 1) * (n2 + 1) // (m + 1) - 1 AS BIGINT) AS chapman
-FROM s
-"""
-
-
-@register("q_events_capture_recapture", _CAPTURE_SQL)
-def q_events_capture_recapture(spark, sf_dir):
-    """Lincoln-Petersen / Chapman capture-recapture estimation (1930 /
-    1951): treat the first and second halves of the date range as two
-    capture occasions of the user population — N̂ = n₁n₂/m, with
-    Chapman's bias-corrected (n₁+1)(n₂+1)/(m+1) − 1 — the ecology
-    estimator a data pipeline reuses to size an unseen population
-    (total distinct users, dedup universe) from two overlapping
-    samples. Every estimate is one integer floor division; the TRUE
-    distinct count rides along so the estimator's bias is part of the
-    pinned result. Three distinct-aggregates + one semi-join-shaped
-    intersection, all map-side combinable."""
-    e = _t(spark, sf_dir, "events")
-    lim = e.agg(F.min(F.to_date("ts")).alias("lo"),
-                F.max(F.to_date("ts")).alias("hi"))
-    half = (e.crossJoin(F.broadcast(lim))
-            .select("user_id",
-                    (F.to_date("ts")
-                     > F.expr("lo + CAST(datediff(hi, lo) div 2"
-                              " AS INT)")).cast("int").alias("h")))
-    a = half.filter(F.col("h") == 0).select("user_id").distinct()
-    b = half.filter(F.col("h") == 1).select("user_id").distinct()
-    s = (a.agg(F.count(F.lit(1)).alias("n1"))
-         .crossJoin(b.agg(F.count(F.lit(1)).alias("n2")))
-         .crossJoin(a.join(b, "user_id")
-                    .agg(F.count(F.lit(1)).alias("m")))
-         .crossJoin(half.select("user_id").distinct()
-                    .agg(F.count(F.lit(1)).alias("truth"))))
-    return s.select(
-        F.col("n1").cast("long").alias("n_first_half"),
-        F.col("n2").cast("long").alias("n_second_half"),
-        F.col("m").cast("long").alias("n_recaptured"),
-        F.col("truth").cast("long").alias("true_distinct"),
-        F.expr("CAST(CASE WHEN m > 0 THEN n1 * n2 div m END AS BIGINT)")
-        .alias("lincoln_petersen"),
-        F.expr("CAST((n1 + 1) * (n2 + 1) div (m + 1) - 1 AS BIGINT)")
-        .alias("chapman"))
-
-
-_LOUVAIN_SQL = """
-WITH RECURSIVE m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {lex}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b, CAST(count(*) AS BIGINT) AS w
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= {min_cooc}
-), nodes AS (
-  SELECT DISTINCT term FROM (SELECT a AS term FROM e
-                             UNION SELECT b FROM e)
-), ty AS (
-  SELECT term, CAST(row_number() OVER (ORDER BY term) AS INTEGER) AS ti
-  FROM nodes
-), wm AS (
-  SELECT x.ti AS i, y.ti AS j,
-         CAST(coalesce((SELECT sum(w) FROM e
-                        WHERE (e.a = x.term AND e.b = y.term)
-                           OR (e.a = y.term AND e.b = x.term)), 0)
-              AS BIGINT) AS w
-  FROM ty x, ty y
-), consts AS (
-  SELECT (SELECT list(l ORDER BY i) FROM (
-            SELECT i, list(w ORDER BY j) AS l FROM wm GROUP BY i) q)
-      AS nn,
-         (SELECT list(kd ORDER BY i) FROM (
-            SELECT i, sum(w) AS kd FROM wm GROUP BY i) q) AS kd,
-         (SELECT CAST(count(*) AS INTEGER) FROM ty) AS k,
-         (SELECT CAST(2 * sum(w) AS BIGINT) FROM e) AS m2
-), st AS (
-  SELECT 0 AS r,
-         list_transform(range(1, c.k + 1),
-                        i -> CAST(i AS INTEGER)) AS comm,
-         c.nn AS nn, c.kd AS kd, c.k AS k, c.m2 AS m2
-  FROM consts c
-  UNION ALL
-  SELECT s.r + 1,
-         list_transform(range(1, s.k + 1), i -> CAST(list_position(
-           list_transform(range(1, s.k + 1), c -> CASE
-             WHEN c <> s.comm[i] AND list_sum(
-                    list_transform(range(1, s.k + 1),
-                      j -> CASE WHEN s.nn[i][j] > 0 AND s.comm[j] = c
-                           THEN 1 ELSE 0 END)) = 0
-             THEN CAST(-1000000000000000000 AS BIGINT)
-             ELSE s.m2 * list_sum(list_transform(range(1, s.k + 1),
-                    j -> CASE WHEN s.comm[j] = c
-                         THEN s.nn[i][j] ELSE 0 END))
-                  - s.kd[i] * (list_sum(list_transform(
-                        range(1, s.k + 1),
-                        j -> CASE WHEN s.comm[j] = c
-                             THEN s.kd[j] ELSE 0 END))
-                      - CASE WHEN s.comm[i] = c
-                             THEN s.kd[i] ELSE 0 END)
-             END),
-           list_max(
-           list_transform(range(1, s.k + 1), c -> CASE
-             WHEN c <> s.comm[i] AND list_sum(
-                    list_transform(range(1, s.k + 1),
-                      j -> CASE WHEN s.nn[i][j] > 0 AND s.comm[j] = c
-                           THEN 1 ELSE 0 END)) = 0
-             THEN CAST(-1000000000000000000 AS BIGINT)
-             ELSE s.m2 * list_sum(list_transform(range(1, s.k + 1),
-                    j -> CASE WHEN s.comm[j] = c
-                         THEN s.nn[i][j] ELSE 0 END))
-                  - s.kd[i] * (list_sum(list_transform(
-                        range(1, s.k + 1),
-                        j -> CASE WHEN s.comm[j] = c
-                             THEN s.kd[j] ELSE 0 END))
-                      - CASE WHEN s.comm[i] = c
-                             THEN s.kd[i] ELSE 0 END)
-             END))) AS INTEGER)) AS comm2,
-         s.nn, s.kd, s.k, s.m2
-  FROM st s WHERE s.r < {rounds}
-), fin AS (
-  SELECT comm, nn, kd, k, m2 FROM st ORDER BY r DESC LIMIT 1
-), memb AS (
-  SELECT ty.term, ty.ti, f.comm[ty.ti] AS c
-  FROM ty, fin f
-), lbl AS (
-  SELECT c, min(term) AS community FROM memb GROUP BY c
-), q4 AS (
-  SELECT f.m2 * list_sum(list_transform(range(1, f.k + 1), i ->
-           list_sum(list_transform(range(1, f.k + 1), j ->
-             CASE WHEN f.comm[i] = f.comm[j]
-                  THEN f.nn[i][j] ELSE 0 END))))
-         - (SELECT sum(t * t) FROM (
-              SELECT f2.comm[CAST(x.i AS INTEGER)] AS c,
-                     sum(f2.kd[CAST(x.i AS INTEGER)]) AS t
-              FROM fin f2, (SELECT unnest(range(1, (SELECT k FROM fin)
-                                                + 1)) AS i) x
-              GROUP BY 1)) AS qx
-  FROM fin f
-)
-SELECT mb.term, l.community,
-       CAST(count(*) OVER (PARTITION BY l.community) AS BIGINT)
-           AS n_members,
-       CAST((SELECT qx FROM q4) AS BIGINT) AS q_x4m2
-FROM memb mb JOIN lbl l ON l.c = mb.c
-"""
-
-
-@register("kg_louvain_docs",
-          _LOUVAIN_SQL.format(lex=kg_docs.lexicon_values_sql(),
-                              min_cooc=kg_docs.MIN_COOCCURRENCES,
-                              rounds=4))
-def kg_louvain_docs(spark, sf_dir):
-    """Deterministic synchronous Louvain phase-1 (Blondel et al. 2008)
-    on the WEIGHTED doc co-occurrence graph: four rounds in which every
-    node simultaneously moves to the neighbor community with the best
-    modularity gain — compared fully cross-multiplied as 2m·k_{i,c} −
-    k_i·Σtot(c∖i), exact integers, ties to the smallest community
-    label — so the notoriously order-dependent sequential Louvain
-    becomes partitioning-proof (the same determinism trade
-    label_propagation documents). Final modularity is pinned as the
-    exact integer Q·4m² = 2m·ΣΣ_in − Σ tot_c². Engine: per round one
-    (node, neighbor-community) weight aggregate + a window argmax over
-    candidates — all data-sized work is equi-joins; oracle: a
-    nested-lambda list recursion over the vocabulary projection."""
-    from .operators.kg_docs import MIN_COOCCURRENCES
-    edges = (_cooc_edges(spark, sf_dir, MIN_COOCCURRENCES)
-             .select(F.col("term_a").alias("src"),
-                     F.col("term_b").alias("dst"),
-                     F.col("common").cast("long").alias("w"))
-             .localCheckpoint(eager=True))
-    und = (edges.unionByName(
-        edges.select(F.col("dst").alias("src"),
-                     F.col("src").alias("dst"), "w"))
-        .localCheckpoint(eager=True))
-    deg = und.groupBy("src").agg(F.sum("w").alias("kd"))
-    m2 = 2 * (edges.agg(F.sum("w")).collect()[0][0] or 0)
-    nodes = deg.select(F.col("src").alias("node"), "kd")
-    comm = nodes.select("node", F.col("node").alias("comm"))
-    for _ in range(4):
-        cdeg = (comm.join(nodes, "node")
-                .groupBy("comm").agg(F.sum("kd").alias("tot")))
-        kic = (und.join(comm.select(F.col("node").alias("dst"),
-                                    F.col("comm").alias("cand")), "dst")
-               .groupBy(F.col("src").alias("node"), "cand")
-               .agg(F.sum("w").alias("kic")))
-        cur = comm.select("node", F.col("comm").alias("curc"))
-        cand = (kic.join(cur, "node")
-                .unionByName(cur.select("node",
-                                        F.col("curc").alias("cand"),
-                                        F.lit(0).cast("long")
-                                        .alias("kic"), "curc")
-                             .select("node", "cand", "kic", "curc"))
-                .groupBy("node", "cand", "curc")
-                .agg(F.max("kic").alias("kic")))
-        scored = (cand.join(nodes, "node")
-                  .join(cdeg.select(F.col("comm").alias("cand"),
-                                    "tot"), "cand")
-                  .select("node", "cand",
-                          (F.lit(m2) * F.col("kic")
-                           - F.col("kd")
-                           * (F.col("tot")
-                              - F.when(F.col("cand") == F.col("curc"),
-                                       F.col("kd")).otherwise(0)))
-                          .alias("score")))
-        w = Window.partitionBy("node").orderBy(F.desc("score"),
-                                               F.asc("cand"))
-        comm = (scored.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .select("node", F.col("cand").alias("comm"))
-                .localCheckpoint(eager=True))
-    lbl = comm.groupBy("comm").agg(F.min("node").alias("community"))
-    sin = (und.join(comm.select(F.col("node").alias("src"),
-                                F.col("comm").alias("ca")), "src")
-           .join(comm.select(F.col("node").alias("dst"),
-                             F.col("comm").alias("cb")), "dst")
-           .filter(F.col("ca") == F.col("cb"))
-           .agg(F.coalesce(F.sum("w"), F.lit(0)).alias("sin")))
-    tots = (comm.join(nodes, "node").groupBy("comm")
-            .agg(F.sum("kd").alias("tot")))
-    sq = tots.agg(F.sum(F.col("tot") * F.col("tot")).alias("sq"))
-    q4 = (sin.crossJoin(sq)
-          .select((F.lit(m2) * F.col("sin") - F.col("sq"))
-                  .cast("long").alias("qx")))
-    wn = Window.partitionBy("community")
-    return (comm.join(lbl, "comm").crossJoin(F.broadcast(q4))
-            .select(F.col("node").alias("term"), "community",
-                    F.count(F.lit(1)).over(wn).cast("long")
-                    .alias("n_members"),
-                    F.col("qx").alias("q_x4m2")))
-
-
-def _dns_fixture_sql(n: int = 36, seed: int = 42) -> str:
-    """Oracle for the DNS wire walk: every manifest column re-derived
-    from the pure dns_msg_spec formulas — a pointer-offset slip, a
-    wrong RDLENGTH skip or a missed mid-name compression target flips
-    the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.dnsfile import (
-        dns_msg_spec,
-    )
-    rows = []
-    for i in range(n):
-        s = dns_msg_spec(i, seed)
-        n_extra = 1 if s["with_txt"] else 0
-        n_ans = 1 + len(s["ips"]) + n_extra
-        ttls = [300] + ([30] if s["with_txt"] else []) + s["ttls"]
-        jumps = 1 + n_extra + len(s["ips"])
-        rows.append(
-            f"({i}, {s['txn_id']}, '{s['qname']}', {n_ans},"
-            f" {len(s['ips'])}, 1, {n_extra},"
-            f" '{_h.md5('|'.join(s['ips']).encode()).hexdigest()}',"
-            f" {min(ttls)}, {jumps})")
-    return (
-        "SELECT CAST(msg_id AS BIGINT) AS msg_id,"
-        " CAST(txn_id AS INTEGER) AS txn_id, qname,"
-        " CAST(n_answers AS INTEGER) AS n_answers,"
-        " CAST(n_a_records AS INTEGER) AS n_a_records,"
-        " CAST(n_cnames AS INTEGER) AS n_cnames,"
-        " CAST(n_skipped_rrs AS INTEGER) AS n_skipped_rrs, ips_md5,"
-        " CAST(min_ttl AS BIGINT) AS min_ttl,"
-        " CAST(n_pointer_jumps AS INTEGER) AS n_pointer_jumps"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(msg_id, txn_id, qname, n_answers, n_a_records, n_cnames,"
-        " n_skipped_rrs, ips_md5, min_ttl, n_pointer_jumps)")
-
-
-@register("multimodal_dns_messages", _dns_fixture_sql())
-def multimodal_dns_messages(spark, sf_dir):
-    """DNS response-message manifest via the HAND-ROLLED RFC 1035 walk
-    (sources/dnsfile.dns_manifest): big-endian header/counts,
-    length-prefixed QNAME labels, and the spec detail naive parsers
-    break on — LABEL COMPRESSION pointers (0xC0|offset), including
-    answers whose names point into the MIDDLE of another record's
-    RDATA, followed with a bounded-hop loop guard. A (IPv4) and CNAME
-    RDATA are decoded; unknown RR types (planted TXT records) are
-    skipped by RDLENGTH exactly as the spec requires and counted. The
-    passive-DNS / network-telemetry surface beside multimodal_pcap:
-    one mapInPandas over the binary column."""
-    from .sources.dnsfile import dns_manifest, synthetic_dns
-    return dns_manifest(synthetic_dns(spark, 36))
-
-
-_SQ8_SQL = """
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), dims AS (
-  SELECT CAST(d.i AS INTEGER) AS dim,
-         min(e.v[CAST(d.i AS INTEGER)]) AS lo,
-         max(e.v[CAST(d.i AS INTEGER)]) AS hi
-  FROM e, (SELECT unnest(range(1, 1 + len((SELECT v FROM e LIMIT 1))))
-           AS i) d
-  GROUP BY 1
-), codes AS (
-  SELECT e.vec_id, dims.dim,
-         CAST(least(255, greatest(0,
-           CAST(floor((e.v[dims.dim] - dims.lo) * 255
-                      / (dims.hi - dims.lo)) AS BIGINT)))
-             AS BIGINT) AS code,
-         e.v[dims.dim] AS orig, dims.lo, dims.hi
-  FROM e, dims
-), err AS (
-  SELECT vec_id,
-         sum((orig - (lo + (code + 0.5) * (hi - lo) / 255))
-             * (orig - (lo + (code + 0.5) * (hi - lo) / 255))) AS se,
-         CAST(sum(code) AS BIGINT) AS code_sum
-  FROM codes GROUP BY vec_id
-)
-SELECT vec_id, code_sum, round(se, 9) AS sq_err,
-       CAST(CASE WHEN se < 0.0001 THEN 1 ELSE 0 END AS INTEGER)
-           AS tight
-FROM err ORDER BY vec_id LIMIT 200
-"""
-
-
-@register("ann_scalar_quantization", _SQ8_SQL)
-def ann_scalar_quantization(spark, sf_dir):
-    """Int8 scalar quantization of the embedding corpus (the SQ8 codec
-    every production vector store ships as its default compression):
-    per-dimension min/max affine mapping to 0..255 codes (floor, clamp)
-    with midpoint reconstruction, emitting each vector's exact code sum
-    (pinning every code integer) and its reconstruction squared error
-    (round-9 — codes 4× smaller than float32 at this error). The
-    per-dim ranges are two aggregates; coding is map-side only — at
-    10⁹ vectors this is one pass, and the code table is what the
-    ann_pq/ivf family would scan instead of raw floats. First 200
-    vectors by id keep the gate result bounded."""
-    emb = _t(spark, sf_dir, "embeddings")
-    ndim = len(emb.select("embedding").first()["embedding"])
-    e = emb.select("vec_id",
-                   F.col("embedding").cast("array<double>").alias("v"))
-    d = (e.select(F.explode(F.sequence(F.lit(1), F.lit(ndim)))
-                  .alias("dim"), "v")
-         .select("dim", F.element_at("v", F.col("dim")).alias("x"))
-         .groupBy("dim").agg(F.min("x").alias("lo"),
-                             F.max("x").alias("hi")))
-    codes = (e.select("vec_id", F.explode(
-        F.sequence(F.lit(1), F.lit(ndim))).alias("dim"), "v")
-        .select("vec_id", "dim",
-                F.element_at("v", F.col("dim")).alias("orig"))
-        .join(F.broadcast(d), "dim")
-        .select("vec_id",
-                F.least(F.lit(255), F.greatest(F.lit(0), F.floor(
-                    (F.col("orig") - F.col("lo")) * 255
-                    / (F.col("hi") - F.col("lo"))))).cast("long")
-                .alias("code"), "orig", "lo", "hi"))
-    rec = (F.col("lo") + (F.col("code") + 0.5)
-           * (F.col("hi") - F.col("lo")) / 255)
-    err = (codes.groupBy("vec_id")
-           .agg(F.sum((F.col("orig") - rec) * (F.col("orig") - rec))
-                .alias("se"),
-                F.sum("code").cast("long").alias("code_sum")))
-    return (err.orderBy("vec_id").limit(200)
-            .select("vec_id", "code_sum",
-                    F.round("se", 9).alias("sq_err"),
-                    F.when(F.col("se") < 0.0001, 1).otherwise(0)
-                    .cast("int").alias("tight")))
-
-
-_MP_W = 7    # subsequence length
-_MP_EXCL = 3  # trivial-match exclusion half-width
-
-_MATPROF_SQL = f"""
-WITH d AS (
-  SELECT CAST(row_number() OVER (ORDER BY day) AS INTEGER) AS rn,
-         CAST(c AS BIGINT) AS x
-  FROM (SELECT CAST(ts AS DATE) AS day, count(*) AS c
-        FROM events GROUP BY 1)
-), n AS (SELECT max(rn) AS n FROM d),
-win AS (
-  SELECT rn AS i FROM d
-  WHERE rn <= (SELECT n FROM n) - {_MP_W} + 1
-), dist AS (
-  SELECT a.i AS i, b.i AS j,
-         (SELECT sum((da.x - db.x) * (da.x - db.x))
-          FROM d da JOIN d db ON db.rn = da.rn - a.i + b.i
-          WHERE da.rn >= a.i AND da.rn < a.i + {_MP_W}) AS d2
-  FROM win a JOIN win b ON abs(a.i - b.i) > {_MP_EXCL}
-), mp AS (
-  SELECT i, min(d2) AS nn_d2 FROM dist GROUP BY i
-)
-SELECT mp.i AS window_idx, CAST(mp.nn_d2 AS BIGINT) AS nn_dist_sq,
-       CAST((SELECT min(j) FROM dist
-             WHERE dist.i = mp.i AND dist.d2 = mp.nn_d2) AS INTEGER)
-           AS nn_idx,
-       CAST((SELECT max(nn_d2) FROM mp) AS BIGINT) AS discord_dist_sq,
-       CAST((SELECT min(i) FROM mp m2
-             WHERE m2.nn_d2 = (SELECT max(nn_d2) FROM mp))
-            AS INTEGER) AS discord_idx
-FROM mp
-"""
-
-
-@register("q_events_matrix_profile", _MATPROF_SQL)
-def q_events_matrix_profile(spark, sf_dir):
-    """Matrix profile (Yeh et al. 2016, the UCR all-pairs subsequence
-    primitive) of the daily event-count series, window {_MP_W}: for
-    every subsequence, the squared Euclidean distance to its nearest
-    non-trivial neighbor (exclusion zone ±{_MP_EXCL} kills self-
-    matches), all EXACT integers — the profile's maximum is the
-    series' top DISCORD (its most anomalous week), its minima are
-    motifs. Non-normalized distances keep the whole computation in
-    integer arithmetic (the z-normalized variant would float); smallest
-    neighbor index breaks ties. Emitted whole — every profile entry is
-    pinned, not just the discord."""
-    e = _t(spark, sf_dir, "events")
-    d = (e.groupBy(F.to_date("ts").alias("day"))
-         .agg(F.count(F.lit(1)).alias("c"))
-         .select(F.row_number().over(Window.orderBy("day"))
-                 .cast("int").alias("rn"),
-                 F.col("c").cast("long").alias("x")))
-    n = d.agg(F.max("rn").alias("n"))
-    win = (d.crossJoin(F.broadcast(n))
-           .filter(F.col("rn") <= F.col("n") - _MP_W + 1)
-           .select(F.col("rn").alias("i")))
-    a, b = win.alias("a"), win.alias("b")
-    pairs = a.join(b, F.abs(F.col("a.i") - F.col("b.i")) > _MP_EXCL) \
-             .select(F.col("a.i").alias("i"), F.col("b.i").alias("j"))
-    k = spark.range(_MP_W).select(F.col("id").cast("int").alias("k"))
-    da = d.select(F.col("rn").alias("ra"), F.col("x").alias("xa"))
-    db = d.select(F.col("rn").alias("rb"), F.col("x").alias("xb"))
-    dist = (pairs.crossJoin(F.broadcast(k))
-            .join(da, F.col("ra") == F.col("i") + F.col("k"))
-            .join(db, F.col("rb") == F.col("j") + F.col("k"))
-            .groupBy("i", "j")
-            .agg(F.sum((F.col("xa") - F.col("xb"))
-                       * (F.col("xa") - F.col("xb"))).alias("d2")))
-    mp = dist.groupBy("i").agg(F.min("d2").alias("nn_d2"))
-    nn = (dist.join(mp, "i").filter(F.col("d2") == F.col("nn_d2"))
-          .groupBy("i").agg(F.min("j").alias("nn_idx")))
-    disc = (mp.agg(F.max("nn_d2").alias("dd"))
-            .crossJoin(mp.select(F.col("i").alias("di"),
-                                 F.col("nn_d2").alias("dv")))
-            .filter(F.col("dv") == F.col("dd"))
-            .agg(F.first("dd").alias("discord_dist_sq"),
-                 F.min("di").alias("discord_idx")))
-    return (mp.join(nn, "i").crossJoin(F.broadcast(disc))
-            .select(F.col("i").alias("window_idx"),
-                    F.col("nn_d2").cast("long").alias("nn_dist_sq"),
-                    F.col("nn_idx").cast("int").alias("nn_idx"),
-                    F.col("discord_dist_sq").cast("long")
-                    .alias("discord_dist_sq"),
-                    F.col("discord_idx").cast("int")
-                    .alias("discord_idx")))
-
-
-_LOF_SQL = """
-WITH d AS (
-  SELECT CAST(row_number() OVER (ORDER BY day) AS INTEGER) AS rn,
-         CAST(xc AS BIGINT) AS x, CAST(xp AS BIGINT) AS y, day
-  FROM (SELECT CAST(ts AS DATE) AS day,
-               sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                   AS xc,
-               sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                   AS xp
-        FROM events GROUP BY 1)
-), dist AS (
-  SELECT a.rn AS i, b.rn AS j,
-         (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS d2
-  FROM d a JOIN d b ON a.rn <> b.rn
-), knn AS (
-  SELECT i, j, d2,
-         row_number() OVER (PARTITION BY i ORDER BY d2, j) AS rk
-  FROM dist
-), kdist AS (
-  SELECT i, max(d2) AS kd FROM knn WHERE rk <= 3 GROUP BY i
-), reach AS (
-  SELECT k.i, k.j, greatest(kd.kd, k.d2) AS rd
-  FROM knn k JOIN kdist kd ON kd.i = k.j
-  WHERE k.rk <= 3
-), rsum AS (
-  SELECT i, CAST(sum(rd) AS BIGINT) AS r FROM reach GROUP BY i
-), lof AS (
-  SELECT k.i,
-         CAST(rs_i.r * sum(1000000000 // rs_j.r) // 3000 AS BIGINT)
-             AS lof_e6
-  FROM knn k
-  JOIN rsum rs_i ON rs_i.i = k.i
-  JOIN rsum rs_j ON rs_j.i = k.j
-  WHERE k.rk <= 3
-  GROUP BY k.i, rs_i.r
-)
-SELECT d.rn AS day_idx, d.day, d.x AS clicks, d.y AS purchases,
-       CAST(kd.kd AS BIGINT) AS kdist_sq, rs.r AS reach_sum,
-       l.lof_e6
-FROM d JOIN kdist kd ON kd.i = d.rn
-JOIN rsum rs ON rs.i = d.rn
-JOIN lof l ON l.i = d.rn
-"""
-
-
-@register("q_events_lof", _LOF_SQL)
-def q_events_lof(spark, sf_dir):
-    """Local Outlier Factor (Breunig et al. 2000, k=3) over the daily
-    (clicks, purchases) integer point cloud — the DENSITY-RATIO
-    anomaly detector next to the global fences (q_events_tukey_fences /
-    gesd/mad): LOF ≈ 1 inside uniform regions, ≫ 1 for points whose
-    neighborhood is sparser than their neighbors'. Squared Euclidean
-    distances keep k-NN selection, k-distances and reachability sums
-    EXACT integers (the squared-distance variant is order-equivalent
-    for the kNN/k-dist steps and documented); the density ratio is the
-    one floored chain lof_e6 = R_i·Σⱼ(10⁹//R_j) // 3000, identical on
-    both engines. Per-day rows carry every intermediate (k-dist,
-    reach sum), pinning the whole computation."""
-    e = _t(spark, sf_dir, "events")
-    d = (e.groupBy(F.to_date("ts").alias("day"))
-         .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).cast("long").alias("x"),
-              F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).cast("long").alias("y"))
-         .select(F.row_number().over(Window.orderBy("day"))
-                 .cast("int").alias("rn"), "day", "x", "y"))
-    a, b = d.alias("a"), d.alias("b")
-    dist = (a.join(b, F.col("a.rn") != F.col("b.rn"))
-            .select(F.col("a.rn").alias("i"), F.col("b.rn").alias("j"),
-                    ((F.col("a.x") - F.col("b.x"))
-                     * (F.col("a.x") - F.col("b.x"))
-                     + (F.col("a.y") - F.col("b.y"))
-                     * (F.col("a.y") - F.col("b.y"))).alias("d2")))
-    knn = (dist.withColumn("rk", F.row_number().over(
-        Window.partitionBy("i").orderBy("d2", "j")))
-        .filter(F.col("rk") <= 3))
-    kdist = knn.groupBy("i").agg(F.max("d2").alias("kd"))
-    reach = (knn.join(kdist.select(F.col("i").alias("j"),
-                                   F.col("kd").alias("kdj")), "j")
-             .select("i", "j", F.greatest("kdj", "d2").alias("rd")))
-    rsum = reach.groupBy("i").agg(F.sum("rd").cast("long").alias("r"))
-    lof = (knn.join(rsum.select(F.col("i").alias("j"),
-                                F.col("r").alias("rj")), "j")
-           .join(rsum, "i")
-           .groupBy("i", "r")
-           .agg(F.sum(F.expr("CAST(1000000000 div rj AS BIGINT)"))
-                .alias("invsum"))
-           .select("i", F.expr("CAST(r * invsum div 3000 AS BIGINT)")
-                   .alias("lof_e6")))
-    return (d.join(kdist, d.rn == kdist.i).drop("i")
-            .join(rsum, d.rn == rsum.i).drop("i")
-            .join(lof, d.rn == lof.i).drop("i")
-            .select(F.col("rn").alias("day_idx"), "day",
-                    F.col("x").alias("clicks"),
-                    F.col("y").alias("purchases"),
-                    F.col("kd").cast("long").alias("kdist_sq"),
-                    F.col("r").alias("reach_sum"), "lof_e6"))
-
-
-_HULL_SQL = """
-WITH d AS (
-  SELECT CAST(row_number() OVER (ORDER BY day) AS INTEGER) AS rn,
-         CAST(xc AS BIGINT) AS x, CAST(xp AS BIGINT) AS y, day
-  FROM (SELECT CAST(ts AS DATE) AS day,
-               sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-                   AS xc,
-               sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-                   AS xp
-        FROM events GROUP BY 1)
-), dd AS (SELECT DISTINCT x, y FROM d),
-hullv AS (
-  SELECT p.x, p.y,
-         EXISTS (
-           SELECT 1 FROM dd q
-           WHERE (q.x <> p.x OR q.y <> p.y)
-             AND NOT EXISTS (
-               SELECT 1 FROM dd r
-               WHERE (q.x - p.x) * (r.y - p.y)
-                     - (q.y - p.y) * (r.x - p.x) < 0)
-         ) AS is_hull
-  FROM dd p
-), diam AS (
-  SELECT max((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y))
-      AS d2
-  FROM dd a JOIN dd b ON a.x < b.x OR (a.x = b.x AND a.y < b.y)
-)
-SELECT d.rn AS day_idx, d.day, d.x AS clicks, d.y AS purchases,
-       h.is_hull AS is_hull_vertex,
-       CAST((SELECT count(*) FROM hullv WHERE is_hull) AS BIGINT)
-           AS n_hull_vertices,
-       CAST((SELECT d2 FROM diam) AS BIGINT) AS diameter_sq
-FROM d JOIN hullv h ON h.x = d.x AND h.y = d.y
-"""
-
-
-@register("q_events_convex_hull", _HULL_SQL)
-def q_events_convex_hull(spark, sf_dir):
-    """Convex hull membership of the daily (clicks, purchases) integer
-    point cloud — pure computational geometry with ZERO floats: a point
-    is a hull vertex iff some supporting line through it and another
-    point leaves every point on one side, tested with exact integer
-    cross products (collinear boundary points count as vertices,
-    documented); the cloud's diameter² is the exact max pairwise
-    squared distance (the rotating-calipers answer, computed flat).
-    The geometric envelope + spread complement of the density-based
-    q_events_lof on the same cloud. Both engines run the same O(n³)
-    witness-line brute over the ≤31 distinct daily points — series-
-    bounded work after one data-sized aggregate."""
-    e = _t(spark, sf_dir, "events")
-    d = (e.groupBy(F.to_date("ts").alias("day"))
-         .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).cast("long").alias("x"),
-              F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).cast("long").alias("y"))
-         .select(F.row_number().over(Window.orderBy("day"))
-                 .cast("int").alias("rn"), "day", "x", "y"))
-    dd = d.select("x", "y").distinct()
-    p, q, r = dd.alias("p"), dd.alias("q"), dd.alias("r")
-    cross = ((F.col("q.x") - F.col("p.x"))
-             * (F.col("r.y") - F.col("p.y"))
-             - (F.col("q.y") - F.col("p.y"))
-             * (F.col("r.x") - F.col("p.x")))
-    bad = (p.join(q, (F.col("q.x") != F.col("p.x"))
-                  | (F.col("q.y") != F.col("p.y")))
-           .join(r, cross < 0, "left")
-           .groupBy(F.col("p.x").alias("x"), F.col("p.y").alias("y"),
-                    F.col("q.x").alias("qx"), F.col("q.y").alias("qy"))
-           .agg(F.sum(F.when(F.col("r.x").isNotNull(), 1)
-                      .otherwise(0)).alias("n_neg")))
-    hull = (bad.groupBy("x", "y")
-            .agg((F.min("n_neg") == 0).alias("is_hull")))
-    a, b = dd.alias("a"), dd.alias("b")
-    diam = (a.join(b, (F.col("a.x") < F.col("b.x"))
-                   | ((F.col("a.x") == F.col("b.x"))
-                      & (F.col("a.y") < F.col("b.y"))))
-            .agg(F.max((F.col("a.x") - F.col("b.x"))
-                       * (F.col("a.x") - F.col("b.x"))
-                       + (F.col("a.y") - F.col("b.y"))
-                       * (F.col("a.y") - F.col("b.y")))
-                 .alias("d2")))
-    nh = hull.agg(F.sum(F.when(F.col("is_hull"), 1).otherwise(0))
-                  .cast("long").alias("nh"))
-    return (d.join(hull, ["x", "y"])
-            .crossJoin(F.broadcast(nh)).crossJoin(F.broadcast(diam))
-            .select(F.col("rn").alias("day_idx"), "day",
-                    F.col("x").alias("clicks"),
-                    F.col("y").alias("purchases"),
-                    F.col("is_hull").alias("is_hull_vertex"),
-                    F.col("nh").alias("n_hull_vertices"),
-                    F.col("d2").cast("long").alias("diameter_sq")))
-
-
-def _der_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the ASN.1 DER walk: every manifest column re-derived
-    from the pure der_doc_spec formulas (total_bytes from the writer,
-    itself pinned by X.690 golden vectors in tests/test_derfile.py) —
-    a long-form length slip, an OID arc mispack or a BIT STRING
-    unused-bits miss flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.derfile import (
-        build_der,
-        der_doc_spec,
-    )
-    rows = []
-    for i in range(n):
-        s = der_doc_spec(i, seed)
-        rows.append(
-            f"({i}, {s['serial']}, '{s['subject']}', '{s['not_before']}',"
-            f" '{s['not_after']}', '{s['sigalg']}', {8 * len(s['key'])},"
-            f" '{_h.md5(s['key']).hexdigest()}',"
-            f" {len(build_der(i, seed))}, 3)")
-    return (
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id,"
-        " CAST(serial AS BIGINT) AS serial, subject, not_before,"
-        " not_after, sigalg_oid, CAST(key_bits AS INTEGER) AS key_bits,"
-        " key_md5, CAST(total_bytes AS INTEGER) AS total_bytes,"
-        " CAST(max_depth AS INTEGER) AS max_depth"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(doc_id, serial, subject, not_before, not_after, sigalg_oid,"
-        " key_bits, key_md5, total_bytes, max_depth)")
-
-
-@register("multimodal_der_certificates", _der_fixture_sql())
-def multimodal_der_certificates(spark, sf_dir):
-    """ASN.1 DER manifest via the HAND-ROLLED X.690 walk
-    (sources/derfile.der_manifest) over certificate-shaped documents:
-    TLV descent with short- AND long-form definite lengths (>127-byte
-    keys force the long form; indefinite 0x80 is rejected as DER
-    demands), minimal-two's-complement INTEGER enforcement (redundant
-    0x00/0xFF prefixes rejected — negative serials exercised), OBJECT
-    IDENTIFIER decode with the 40·X+Y first-arc packing and base-128
-    continuation arcs, UTCTime, and BIT STRING with its unused-bits
-    octet. The certificate/LDAP/SNMP encoding surface: one mapInPandas
-    over the binary column."""
-    from .sources.derfile import der_manifest, synthetic_der_docs
-    return der_manifest(synthetic_der_docs(spark, 30))
-
-
-# Per-defect error signatures under the validator's documented
-# one-byte-resync policy (hand-derived from the RFC 3629 table; the
-# accept path is independently pinned against Python's decoder in
-# tests/test_utf8check.py): (kinds, n_bytes).
-_UTF8_SIGS = [
-    (["overlong", "bare_continuation"], 2),            # C0 AF
-    (["surrogate", "bare_continuation",
-      "bare_continuation"], 3),                        # ED A0 80
-    (["out_of_range", "bare_continuation",
-      "bare_continuation", "bare_continuation"], 4),   # F5 80 80 80
-    (["bare_continuation"], 1),                        # lone 80
-    (["truncated", "bare_continuation"], 2),           # E2 82 + resync
-    (["truncated"], 1),                                # trailing C3
-]
-
-
-def _utf8_fixture_sql(n: int = 40, seed: int = 42) -> str:
-    """Oracle for the UTF-8 validator: counts re-derived from the pure
-    utf8_doc_spec formulas plus the hand-derived per-defect error
-    signatures above — a shortest-form table slip or a resync error
-    flips the hash."""
-    from knowledge_extraction_pipeline_spark.sources.utf8check import (
-        utf8_doc_spec,
-    )
-    rows = []
-    for i in range(n):
-        s = utf8_doc_spec(i, seed)
-        n_def = len(s["defects"])
-        sig_idx = [(i + j * 2 + seed) % (len(_UTF8_SIGS) - 1)
-                   for j in range(n_def)]
-        kinds: set[str] = set()
-        n_err = 0
-        defect_bytes = 0
-        for si in sig_idx:
-            ks, nb = _UTF8_SIGS[si]
-            kinds.update(ks)
-            n_err += len(ks)
-            defect_bytes += nb
-        if s["tail_trunc"]:
-            kinds.update(_UTF8_SIGS[5][0])
-            n_err += 1
-        valid_len = len(s["valid"])
-        n_bytes = valid_len + defect_bytes + n_def \
-            + (1 if s["tail_trunc"] else 0)
-        n_chars = (s["n_ascii"] + s["n_2byte"] + s["n_3byte"]
-                   + s["n_4byte"] + n_def)
-        first = valid_len if (n_def or s["tail_trunc"]) else -1
-        rows.append(
-            f"({i}, {n_bytes}, {n_chars}, {s['n_ascii'] + n_def},"
-            f" {s['n_2byte']}, {s['n_3byte']}, {s['n_4byte']},"
-            f" {n_err}, {first}, '{','.join(sorted(kinds))}')")
-    return (
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id,"
-        " CAST(n_bytes AS INTEGER) AS n_bytes,"
-        " CAST(n_chars AS INTEGER) AS n_chars,"
-        " CAST(n_ascii AS INTEGER) AS n_ascii,"
-        " CAST(n_2byte AS INTEGER) AS n_2byte,"
-        " CAST(n_3byte AS INTEGER) AS n_3byte,"
-        " CAST(n_4byte AS INTEGER) AS n_4byte,"
-        " CAST(n_errors AS INTEGER) AS n_errors,"
-        " CAST(first_error_offset AS INTEGER) AS first_error_offset,"
-        " error_kinds"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(doc_id, n_bytes, n_chars, n_ascii, n_2byte, n_3byte,"
-        " n_4byte, n_errors, first_error_offset, error_kinds)")
-
-
-@register("multimodal_utf8_validation", _utf8_fixture_sql())
-def multimodal_utf8_validation(spark, sf_dir):
-    """UTF-8 well-formedness audit via the HAND-ROLLED RFC 3629
-    shortest-form table walk (sources/utf8check.check_utf8) — the
-    validation every byte-level ingestion runs first: per-document
-    char-width census plus a FAILURE taxonomy (overlong C0/C1 and E0/F0
-    second-byte floors, UTF-16 surrogates ED A0-BF, beyond-U+10FFFF
-    F4 ceilings and F5-FF, bare continuations, truncated sequences),
-    with deterministic planted defects exercising every class and a
-    documented one-byte resync. Never round-trips through a library
-    decoder; the accept path is cross-pinned against Python's decoder
-    in unit tests. One mapInPandas over the binary column."""
-    from .sources.utf8check import synthetic_utf8_docs, utf8_manifest
-    return utf8_manifest(synthetic_utf8_docs(spark, 40))
-
-
-def _det4(cell) -> str:
-    """Leibniz expansion of a 4×4 determinant as an expression string;
-    `cell(i, j)` names the (i,j) entry. 24 terms, shared verbatim by
-    the Spark expression and the DuckDB oracle so the arithmetic is
-    identical."""
-    from itertools import permutations
-    terms = []
-    for perm in permutations(range(4)):
-        inv = sum(1 for a in range(4) for b in range(a + 1, 4)
-                  if perm[a] > perm[b])
-        sign = "-" if inv % 2 else "+"
-        prod = " * ".join(cell(i, perm[i]) for i in range(4))
-        terms.append(f"{sign} {prod}")
-    return "(" + " ".join(terms) + ")"
-
-
-def _absorbing_sql() -> str:
-    m = [[f"m{i}{j}" for j in range(4)] for i in range(4)]
-    det = _det4(lambda i, j: m[i][j])
-    t_dets = [_det4(lambda i, j, k=k: (f"r{i}" if j == k else m[i][j]))
-              for k in range(4)]
-    sel = []
-    for k in range(4):
-        sel.append(
-            f"CAST(CASE WHEN {det} = 0 THEN NULL"
-            f" WHEN {t_dets[k]} >= 0"
-            f" THEN ({t_dets[k]}) * 1000000 // ({det})"
-            f" ELSE -((-({t_dets[k]})) * 1000000 // ({det}))"
-            f" END AS BIGINT) AS t{k}_e6")
-    return f"""
-WITH s AS (
-  SELECT event_type AS src,
-         lead(event_type, 1) OVER
-           (PARTITION BY user_id ORDER BY ts, event_id) AS dst
-  FROM events
-), c AS (
-  SELECT src, dst, CAST(count(*) AS HUGEINT) AS n
-  FROM s WHERE dst IS NOT NULL GROUP BY 1, 2
-), ty AS (
-  SELECT src AS t,
-         CAST(row_number() OVER (ORDER BY src) AS INTEGER) AS ti
-  FROM (SELECT DISTINCT src FROM c WHERE src <> 'purchase')
-), cells AS (
-  SELECT {", ".join(
-      f"coalesce((SELECT sum(c.n) FROM c JOIN ty a ON a.t = c.src"
-      f" JOIN ty b ON b.t = c.dst"
-      f" WHERE a.ti = {i + 1} AND b.ti = {j + 1}), 0) AS c{i}{j}"
-      for i in range(4) for j in range(4))},
-         {", ".join(
-      f"coalesce((SELECT sum(c.n) FROM c JOIN ty a ON a.t = c.src"
-      f" WHERE a.ti = {i + 1}), 0) AS r{i}" for i in range(4))}
-), mm AS (
-  SELECT *, {", ".join(
-      f"CASE WHEN {i} = {j} THEN r{i} - c{i}{j} ELSE -c{i}{j} END"
-      f" AS m{i}{j}" for i in range(4) for j in range(4))}
-  FROM cells
-), sol AS (
-  SELECT CAST({det} AS HUGEINT) AS det_m,
-         {", ".join(sel)},
-         {", ".join(f"CAST(r{k} AS BIGINT) AS out{k}"
-                    for k in range(4))}
-  FROM mm
-)
-SELECT ty.t AS state, CAST(ty.ti AS INTEGER) AS state_idx,
-       CASE ty.ti {" ".join(f"WHEN {k + 1} THEN sol.out{k}"
-                            for k in range(4))} END AS n_outgoing,
-       CAST(sol.det_m AS VARCHAR) AS det_m,
-       CASE ty.ti {" ".join(f"WHEN {k + 1} THEN sol.t{k}_e6"
-                            for k in range(4))} END
-           AS expected_steps_e6
-FROM ty, sol
-"""
-
-
-@register("q_events_absorbing_chain", _absorbing_sql())
-def q_events_absorbing_chain(spark, sf_dir):
-    """Absorbing Markov chain analysis (Kemeny-Snell fundamental-matrix
-    theory): make 'purchase' absorbing and solve (I−Q)t = 1 for the
-    expected number of steps to conversion from each transient event
-    type — the closed-form complement of the simulation-free funnel
-    family. Row-scaling by each state's outgoing count makes the
-    system the INTEGER matrix M (Mᵢᵢ = rᵢ−cᵢᵢ, Mᵢⱼ = −cᵢⱼ), solved by
-    Cramer with a generated 24-term Leibniz expansion shared VERBATIM
-    by both engines — exact HUGEINT determinants, one sign-floored e6
-    division per state, NULL on a singular (non-absorbing) chain.
-    Transition counts come from the same per-user lead() stream as
-    q_events_entropy_rate."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = (e.select(F.col("event_type").alias("src"),
-                  F.lead("event_type", 1).over(w).alias("dst"))
-         .filter(F.col("dst").isNotNull()))
-    c = (s.groupBy("src", "dst")
-         .agg(F.count(F.lit(1)).cast("decimal(38,0)").alias("n")))
-    types = sorted(r["src"] for r in
-                   c.filter(F.col("src") != "purchase")
-                   .select("src").distinct().collect())
-    cnt = {(r["src"], r["dst"]): int(r["n"]) for r in c.collect()}
-    k = len(types)
-    if k != 4:
-        raise ValueError(f"expected 4 transient states, got {k}")
-    r_out = [sum(v for (a, _), v in cnt.items() if a == t)
-             for t in types]
-    cm = [[cnt.get((types[i], types[j]), 0) for j in range(4)]
-          for i in range(4)]
-    mm = [[(r_out[i] - cm[i][j]) if i == j else -cm[i][j]
-           for j in range(4)] for i in range(4)]
-
-    from itertools import permutations
-
-    def det4(mat):
-        tot = 0
-        for perm in permutations(range(4)):
-            inv = sum(1 for a in range(4) for b in range(a + 1, 4)
-                      if perm[a] > perm[b])
-            prod = 1
-            for i in range(4):
-                prod *= mat[i][perm[i]]
-            tot += -prod if inv % 2 else prod
-        return tot
-
-    det_m = det4(mm)
-    out = []
-    for idx, t in enumerate(types):
-        repl = [[r_out[i] if j == idx else mm[i][j] for j in range(4)]
-                for i in range(4)]
-        dk = det4(repl)
-        if det_m == 0:
-            te6 = None
-        elif dk >= 0:
-            te6 = dk * 10 ** 6 // det_m
-        else:
-            te6 = -((-dk) * 10 ** 6 // det_m)
-        out.append((t, idx + 1, r_out[idx], str(det_m), te6))
-    return spark.createDataFrame(
-        out, "state string, state_idx int, n_outgoing long,"
-             " det_m string, expected_steps_e6 long")
-
-
-def _lz4_fixture_sql(n: int = 36, seed: int = 42) -> str:
-    """Oracle for the LZ4 block walk: content columns from the pure
-    lz4_doc_spec formulas; stream-shape columns from the WRITER'S own
-    emission accounting (lz4_compress_with_stats), which the reader's
-    independent parse must reproduce — golden tests additionally decode
-    hand-written foreign blocks."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.lz4block import (
-        lz4_compress_with_stats,
-        lz4_doc_spec,
-    )
-    rows = []
-    for i in range(n):
-        text = lz4_doc_spec(i, seed)
-        blk, st = lz4_compress_with_stats(text)
-        rows.append(
-            f"({i}, {len(blk)}, {len(text)},"
-            f" '{_h.md5(text).hexdigest()}', {st['n_sequences']},"
-            f" {st['n_matches']}, {st['n_overlap_matches']},"
-            f" {st['max_match_len']})")
-    return (
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id,"
-        " CAST(compressed_bytes AS INTEGER) AS compressed_bytes,"
-        " CAST(decompressed_bytes AS INTEGER) AS decompressed_bytes,"
-        " text_md5, CAST(n_sequences AS INTEGER) AS n_sequences,"
-        " CAST(n_matches AS INTEGER) AS n_matches,"
-        " CAST(n_overlap_matches AS INTEGER) AS n_overlap_matches,"
-        " CAST(max_match_len AS INTEGER) AS max_match_len"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(doc_id, compressed_bytes, decompressed_bytes, text_md5,"
-        " n_sequences, n_matches, n_overlap_matches, max_match_len)")
-
-
-@register("multimodal_lz4_blocks", _lz4_fixture_sql())
-def multimodal_lz4_blocks(spark, sf_dir):
-    """LZ4 block-format decode via the HAND-ROLLED walk
-    (sources/lz4block.lz4_decompress): token nibbles, 255-terminated
-    length extensions, little-endian offsets, minimum-match-4, the
-    literals-only final sequence, and the OVERLAPPING match copy
-    (offset < length → byte-by-byte forward copy, the RLE-via-overlap
-    semantics a memcpy-based decoder corrupts) — every fixture plants a
-    single-char run so the overlap path always fires. The codec under
-    parquet/Kafka/RocksDB payloads: one mapInPandas over the binary
-    column. Reader parse is gated against the writer's independent
-    emission accounting plus hand-written foreign-block golden
-    vectors."""
-    from .sources.lz4block import lz4_manifest, synthetic_lz4_blocks
-    return lz4_manifest(synthetic_lz4_blocks(spark, 36))
-
-
-_CONDUCT_SQL = _lpa_ctes(5, min_cooc=330) + """
-, lab AS (SELECT node, label FROM l5),
-deg AS (SELECT node, CAST(count(*) AS BIGINT) AS d FROM bd GROUP BY 1),
-vol AS (
-  SELECT lab.label, CAST(sum(deg.d) AS BIGINT) AS vol,
-         CAST(count(*) AS BIGINT) AS n_members
-  FROM lab JOIN deg ON deg.node = lab.node GROUP BY 1
-), cut AS (
-  SELECT label, CAST(count(*) AS BIGINT) AS cut FROM (
-    SELECT la.label FROM e
-    JOIN lab la ON la.node = e.a JOIN lab lb ON lb.node = e.b
-    WHERE la.label <> lb.label
-    UNION ALL
-    SELECT lb.label FROM e
-    JOIN lab la ON la.node = e.a JOIN lab lb ON lb.node = e.b
-    WHERE la.label <> lb.label) GROUP BY 1
-), te AS (SELECT CAST(2 * count(*) AS BIGINT) AS vt FROM e)
-SELECT v.label AS community, v.n_members, v.vol AS volume,
-       coalesce(c.cut, 0) AS cut_edges,
-       CAST(CASE WHEN least(v.vol, te.vt - v.vol) > 0
-                 THEN coalesce(c.cut, 0) * 1000000
-                      // least(v.vol, te.vt - v.vol) END AS BIGINT)
-           AS conductance_e6
-FROM vol v LEFT JOIN cut c ON c.label = v.label, te
-"""
-
-
-@register("kg_conductance_docs", _CONDUCT_SQL)
-def kg_conductance_docs(spark, sf_dir):
-    """Per-community conductance (the Cheeger-style cut-quality measure,
-    Shi-Malik / Kannan-Vempala-Vetta): φ(S) = cut(S) / min(vol(S),
-    vol(V∖S)) for every label-propagation community — the EXTERNAL
-    sparsity audit complementing kg_modularity_docs' internal-density
-    score over the SAME partition (shared recurrence, so the two
-    quality measures can never drift apart). Cut edges, volumes and
-    the floor-divided φ·1e6 are all exact integers; a partition-wide
-    community yields NULL (no cut to normalize). One degree aggregate
-    + one label join over the edge list — scale-shape identical to
-    the modularity computation."""
-    from .operators.graph_algos import label_propagation
-    edges = _cooc_edges(spark, sf_dir, 330)
-    e = (edges.select(F.col("term_a").alias("a"),
-                      F.col("term_b").alias("b")))
-    lab = label_propagation(
-        edges.withColumnRenamed("term_a", "subj")
-             .withColumnRenamed("term_b", "obj"), n_iters=5) \
-        .select("node", F.col("community").alias("label"))
-    bd = (e.select(F.col("a").alias("node"), F.col("b").alias("nbr"))
-          .unionByName(e.select(F.col("b").alias("node"),
-                                F.col("a").alias("nbr"))).distinct())
-    deg = bd.groupBy("node").agg(F.count(F.lit(1)).cast("long")
-                                 .alias("d"))
-    vol = (lab.join(deg, "node").groupBy("label")
-           .agg(F.sum("d").cast("long").alias("vol"),
-                F.count(F.lit(1)).cast("long").alias("n_members")))
-    ej = (e.join(lab.select(F.col("node").alias("a"),
-                            F.col("label").alias("la")), "a")
-          .join(lab.select(F.col("node").alias("b"),
-                           F.col("label").alias("lb")), "b")
-          .filter(F.col("la") != F.col("lb")))
-    cut = (ej.select(F.col("la").alias("label"))
-           .unionByName(ej.select(F.col("lb").alias("label")))
-           .groupBy("label").agg(F.count(F.lit(1)).cast("long")
-                                 .alias("cut")))
-    te = e.agg((2 * F.count(F.lit(1))).cast("long").alias("vt"))
-    return (vol.join(cut, "label", "left").crossJoin(F.broadcast(te))
-            .select(F.col("label").alias("community"), "n_members",
-                    F.col("vol").alias("volume"),
-                    F.coalesce("cut", F.lit(0)).cast("long")
-                    .alias("cut_edges"),
-                    F.expr("CAST(CASE WHEN least(vol, vt - vol) > 0"
-                           " THEN coalesce(cut, 0) * 1000000"
-                           " div least(vol, vt - vol) END AS BIGINT)")
-                    .alias("conductance_e6")))
-
-
-def _tsp_sql(n: int = 10) -> str:
-    """Held-Karp oracle: the DP over subsets as one unrolled flat table
-    per subset size (house pagerank-unroll technique) — s{k} holds
-    (mask, last, cost) minima for tours visiting k cities from city 1;
-    distances are e6-floored cosine distances fixed ONCE in `dist`."""
-    steps = []
-    for k in range(2, n + 1):
-        p = f"s{k - 1}"
-        steps.append(f""",
-s{k} AS MATERIALIZED (
-  SELECT mask | (1 << (j - 1)) AS mask, j AS last,
-         min(cost + d) AS cost
-  FROM (SELECT s.mask, s.last, s.cost, d.j, d.d
-        FROM {p} s JOIN dist d ON d.i = s.last
-        WHERE (s.mask & (1 << (d.j - 1))) = 0)
-  GROUP BY 1, 2
-)""")
-    return f"""
-WITH e AS MATERIALIZED (
-  SELECT CAST(row_number() OVER (ORDER BY vec_id) AS INTEGER) AS i,
-         embedding::DOUBLE[] AS v
-  FROM embeddings ORDER BY vec_id LIMIT {n}
-), dist AS MATERIALIZED (
-  SELECT a.i, b.i AS j,
-         CAST(floor(1000000 * (1.0
-           - list_dot_product(a.v, b.v)
-             / (sqrt(list_dot_product(a.v, a.v))
-                * sqrt(list_dot_product(b.v, b.v))))) AS BIGINT) AS d
-  FROM e a JOIN e b ON a.i <> b.i
-), s1 AS (SELECT 1 AS mask, 1 AS last, CAST(0 AS BIGINT) AS cost)
-{"".join(steps)}
-SELECT CAST({n} AS INTEGER) AS n_cities,
-       CAST(min(s.cost + d.d) AS BIGINT) AS optimal_tour_e6,
-       CAST((SELECT count(*) FROM s{n // 2 + 1}) AS BIGINT)
-           AS n_mid_states,
-       CAST((SELECT min(cost) FROM s{n}) AS BIGINT) AS best_path_e6
-FROM s{n} s JOIN dist d ON d.i = s.last AND d.j = 1
-"""
-
-
-@register("ann_tsp_heldkarp", _tsp_sql())
-def ann_tsp_heldkarp(spark, sf_dir):
-    """Exact travelling-salesman tour (Held-Karp 1962, the O(n²2ⁿ)
-    bitmask DP) through the first 10 embedding vectors under e6-floored
-    cosine distances — the optimal-ordering primitive behind seriation
-    / minimal-seek batch layouts, solved EXACTLY where greedy k-center
-    (ann_kcenter_gonzalez) only approximates. Distances are floored to
-    integers once, so the whole DP is exact integer arithmetic;
-    optimal closed-tour cost, the best open-path cost and the DP's
-    mid-layer state count (pinning the subset enumeration, C(9,4)·5
-    states) are all emitted. Engine: bounded driver DP (1024×10
-    states); oracle: one flat (mask, last, cost) minimum table per
-    subset size."""
-    emb = (_t(spark, sf_dir, "embeddings").orderBy("vec_id").limit(10)
-           .select("embedding").collect())
-    import math as _m
-    vs = [list(r["embedding"]) for r in emb]
-    n = len(vs)
-
-    def dist(a, b):
-        dot = sum(x * y for x, y in zip(vs[a], vs[b]))
-        na = _m.sqrt(sum(x * x for x in vs[a]))
-        nb = _m.sqrt(sum(x * x for x in vs[b]))
-        return int(_m.floor(1_000_000 * (1.0 - dot / (na * nb))))
-
-    d = [[0] * n for _ in range(n)]
-    for i in range(n):
-        for j in range(n):
-            if i != j:
-                d[i][j] = dist(i, j)
-    INF = float("inf")
-    dp = {(1, 0): 0}
-    for mask in range(1, 1 << n):
-        if not mask & 1:
-            continue
-        for last in range(n):
-            if (mask, last) not in dp:
-                continue
-            base = dp[(mask, last)]
-            for j in range(1, n):
-                if mask & (1 << j):
-                    continue
-                key = (mask | (1 << j), j)
-                cand = base + d[last][j]
-                if cand < dp.get(key, INF):
-                    dp[key] = cand
-    full = (1 << n) - 1
-    tour = min(dp[(full, last)] + d[last][0] for last in range(1, n))
-    path = min(dp[(full, last)] for last in range(n)
-               if (full, last) in dp)
-    mid = n // 2 + 1
-    n_mid = sum(1 for (mask, _last) in dp
-                if bin(mask).count("1") == mid)
-    out = [(n, tour, n_mid, path)]
-    return spark.createDataFrame(
-        out, "n_cities int, optimal_tour_e6 long, n_mid_states long,"
-             " best_path_e6 long")
-
-
-_JOHNSON_SQL = """
-WITH RECURSIVE jobs AS (
-  SELECT p_partkey, CAST(p_size AS BIGINT) AS t1,
-         CAST(CAST(p_retailprice * 100 AS BIGINT) % 97 + 3 AS BIGINT)
-             AS t2
-  FROM part ORDER BY p_retailprice DESC, p_partkey LIMIT 20
-), ordered AS (
-  SELECT p_partkey, t1, t2,
-         CAST(row_number() OVER (ORDER BY
-           CASE WHEN t1 < t2 THEN 0 ELSE 1 END,
-           CASE WHEN t1 < t2 THEN t1 ELSE -t2 END,
-           p_partkey) AS BIGINT) AS seq
-  FROM jobs
-), sim AS (
-  SELECT CAST(0 AS BIGINT) AS seq, CAST(0 AS BIGINT) AS c1,
-         CAST(0 AS BIGINT) AS c2
-  UNION ALL
-  SELECT o.seq, s.c1 + o.t1,
-         greatest(s.c2, s.c1 + o.t1) + o.t2
-  FROM sim s JOIN ordered o ON o.seq = s.seq + 1
-)
-SELECT o.seq AS position, o.p_partkey, o.t1 AS machine1_time,
-       o.t2 AS machine2_time, s.c1 AS m1_completion,
-       s.c2 AS m2_completion,
-       CAST((SELECT max(c2) FROM sim) AS BIGINT) AS makespan,
-       CAST((SELECT sum(t1) FROM jobs) AS BIGINT) AS m1_lower_bound
-FROM ordered o JOIN sim s ON s.seq = o.seq
-"""
-
-
-@register("q_parts_johnson_rule", _JOHNSON_SQL)
-def q_parts_johnson_rule(spark, sf_dir):
-    """Johnson's rule (1954) — the PROVABLY OPTIMAL two-machine
-    flow-shop schedule: jobs with t₁ < t₂ run first in ascending t₁,
-    the rest last in descending t₂ (the -t₂ sort key makes that one
-    ordered pass; p_partkey breaks ties). Machine times are exact
-    integers (size, and a price-derived t₂), the completion-time fold
-    C₁ += t₁, C₂ = max(C₂, C₁) + t₂ is a 20-step scalar recursion, and
-    the FULL schedule with per-position completion times plus the
-    optimal makespan and the Σt₁ lower bound is pinned — the
-    deterministic-optimality complement of the LPT heuristic
-    (q_parts_lpt_makespan). Engine: ordered window + bounded driver
-    fold; oracle: the same fold as a two-column recursion."""
-    p = _t(spark, sf_dir, "part")
-    jobs = (p.orderBy(F.desc("p_retailprice"), "p_partkey").limit(20)
-            .select("p_partkey", F.col("p_size").cast("long")
-                    .alias("t1"),
-                    (F.expr("CAST(p_retailprice * 100 AS BIGINT)")
-                     % 97 + 3).cast("long").alias("t2")))
-    ordered = jobs.select(
-        "p_partkey", "t1", "t2",
-        F.row_number().over(Window.orderBy(
-            F.when(F.col("t1") < F.col("t2"), 0).otherwise(1),
-            F.when(F.col("t1") < F.col("t2"), F.col("t1"))
-            .otherwise(-F.col("t2")), "p_partkey")).cast("long")
-        .alias("seq"))
-    rows = sorted(ordered.collect(), key=lambda r: r["seq"])
-    c1 = c2 = 0
-    out = []
-    for r in rows:
-        c1 += r["t1"]
-        c2 = max(c2, c1) + r["t2"]
-        out.append((r["seq"], r["p_partkey"], r["t1"], r["t2"], c1, c2))
-    makespan = c2
-    m1lb = sum(r["t1"] for r in rows)
-    final = [(seq, pk, t1, t2, a, b, makespan, m1lb)
-             for seq, pk, t1, t2, a, b in out]
-    return spark.createDataFrame(
-        final, "position long, p_partkey long, machine1_time long,"
-               " machine2_time long, m1_completion long,"
-               " m2_completion long, makespan long, m1_lower_bound long")
-
-
-_KIRCHHOFF_SQL = """
-WITH RECURSIVE m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {lex}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 330
-), bd AS (SELECT a AS x, b AS y FROM e UNION SELECT b, a FROM e),
-nodes AS (SELECT DISTINCT x AS term FROM bd),
-comp AS (
-  -- restrict to the component of the min node (Kirchhoff needs
-  -- a connected graph): min-label closure
-  SELECT DISTINCT term FROM nodes
-  WHERE term IN (
-    WITH RECURSIVE rc(v) AS (
-      SELECT min(term) FROM nodes
-      UNION
-      SELECT bd.y FROM rc JOIN bd ON bd.x = rc.v)
-    SELECT v FROM rc)
-), ty AS (
-  SELECT term, CAST(row_number() OVER (ORDER BY term) AS INTEGER) AS ti
-  FROM comp
-), nn AS (
-  SELECT x.ti AS i, y.ti AS j,
-         CAST(CASE WHEN EXISTS (SELECT 1 FROM e
-                WHERE (e.a = x.term AND e.b = y.term)
-                   OR (e.a = y.term AND e.b = x.term))
-              THEN 1 ELSE 0 END AS HUGEINT) AS adj
-  FROM ty x, ty y
-), deg AS (
-  SELECT i, sum(adj) AS d FROM nn GROUP BY i
-), dims AS (SELECT CAST(count(*) AS INTEGER) - 1 AS msz FROM ty),
-lap AS (
-  -- reduced Laplacian: drop the last row/column
-  SELECT (SELECT list(l ORDER BY i) FROM (
-    SELECT n2.i, list(CASE WHEN n2.i = n2.j THEN dg.d
-                           ELSE -n2.adj END ORDER BY n2.j) AS l
-    FROM nn n2 JOIN deg dg ON dg.i = n2.i, dims
-    WHERE n2.i <= dims.msz AND n2.j <= dims.msz
-    GROUP BY n2.i) q) AS mat,
-    (SELECT msz FROM dims) AS msz
-), st AS (
-  SELECT 0 AS k, l.mat AS mat, l.msz AS msz FROM lap l
-  UNION ALL
-  SELECT s.k + 1,
-         list_transform(range(1, s.msz + 1), i ->
-           list_transform(range(1, s.msz + 1), j ->
-             CASE WHEN i > s.k + 1 AND j > s.k + 1
-             THEN (s.mat[s.k + 1][s.k + 1] * s.mat[i][j]
-                   - s.mat[i][s.k + 1] * s.mat[s.k + 1][j])
-                  // (CASE WHEN s.k = 0 THEN 1
-                      ELSE s.mat[s.k][s.k] END)
-             ELSE s.mat[i][j] END)),
-         s.msz
-  FROM st s WHERE s.k < s.msz - 1
-), fin AS (
-  SELECT mat, msz FROM st ORDER BY k DESC LIMIT 1
-)
-SELECT CAST(f.msz + 1 AS INTEGER) AS n_nodes,
-       CAST((SELECT count(*) FROM e
-             WHERE e.a IN (SELECT term FROM comp)) AS BIGINT)
-           AS n_edges,
-       CAST(f.mat[f.msz][f.msz] AS VARCHAR) AS n_spanning_trees
-FROM fin f
-""".format(lex=kg_docs.lexicon_values_sql())
-
-
-@register("kg_spanning_trees_docs", _KIRCHHOFF_SQL)
-def kg_spanning_trees_docs(spark, sf_dir):
-    """EXACT spanning-tree count of the sparsified co-occurrence
-    graph's main component via Kirchhoff's matrix-tree theorem (1847):
-    the determinant of the reduced Laplacian, computed by FRACTION-FREE
-    Bareiss elimination — every intermediate entry is an exact integer
-    minor, every division is exact (so truncation equals floor), and no
-    pivoting is needed because reduced Laplacians of connected graphs
-    are positive definite. The count is the graph's global redundancy
-    measure (1 = a tree, growth is exponential in cycle richness) —
-    the exact counterpart of the Borůvka forest's single witness tree.
-    Engine: bounded driver Bareiss over the vocabulary projection;
-    oracle: the identical elimination as a nested-list recursion, one
-    step per pivot."""
-    from .operators.canonicalize import connected_components
-    edges = (_cooc_edges(spark, sf_dir, 330)
-             .select(F.col("term_a").alias("src"),
-                     F.col("term_b").alias("dst")))
-    comp = (connected_components(edges, driver_threshold=0)
-            .select(F.col("norm_term").alias("node"),
-                    F.col("canon").alias("component")))
-    root = comp.agg(F.min("node").alias("r")).collect()[0]["r"]
-    main = {r["node"] for r in
-            comp.filter(F.col("component")
-                        == comp.filter(F.col("node") == root)
-                        .select("component").collect()[0][0])
-            .collect()}
-    erows = [(r["src"], r["dst"]) for r in edges.collect()
-             if r["src"] in main and r["dst"] in main]
-    nodes = sorted(main)
-    ti = {t: i for i, t in enumerate(nodes)}
-    n = len(nodes)
-    lap = [[0] * n for _ in range(n)]
-    for a, b in erows:
-        lap[ti[a]][ti[a]] += 1
-        lap[ti[b]][ti[b]] += 1
-        lap[ti[a]][ti[b]] -= 1
-        lap[ti[b]][ti[a]] -= 1
-    msz = n - 1
-    mat = [row[:msz] for row in lap[:msz]]
-    for k in range(msz - 1):
-        piv_prev = mat[k - 1][k - 1] if k > 0 else 1
-        for i in range(k + 1, msz):
-            for j in range(k + 1, msz):
-                mat[i][j] = (mat[k][k] * mat[i][j]
-                             - mat[i][k] * mat[k][j]) // piv_prev
-    trees = mat[msz - 1][msz - 1] if msz >= 1 else 1
-    out = [(n, len(erows), str(trees))]
-    return spark.createDataFrame(
-        out, "n_nodes int, n_edges long, n_spanning_trees string")
-
-
-_BANZHAF_SQL = """
-WITH ty AS (
-  SELECT event_type AS t, CAST(count(*) AS BIGINT) AS w,
-         CAST(row_number() OVER (ORDER BY event_type) AS INTEGER) AS ti
-  FROM events GROUP BY 1
-), tot AS (
-  SELECT sum(w) AS tw, sum(w) // 2 + 1 AS quota FROM ty
-), ws AS (SELECT list(w ORDER BY ti) AS wl FROM ty),
-coal AS (
-  SELECT CAST(unnest(range(0, 32)) AS INTEGER) AS mask
-), cw AS (
-  SELECT c.mask,
-         list_sum(list_transform(range(1, 6), i ->
-           CASE WHEN (c.mask & (1 << (i - 1))) <> 0
-                THEN ws.wl[i] ELSE 0 END)) AS cwt
-  FROM coal c, ws
-), swings AS (
-  SELECT ty.t, ty.ti, ty.w,
-         CAST(sum(CASE WHEN (cw.mask & (1 << (ty.ti - 1))) = 0
-                        AND cw.cwt < tot.quota
-                        AND cw.cwt + ty.w >= tot.quota
-                  THEN 1 ELSE 0 END) AS BIGINT) AS n_swings
-  FROM ty, cw, tot
-  GROUP BY ty.t, ty.ti, ty.w
-), norm AS (SELECT sum(n_swings) AS ts FROM swings)
-SELECT s.t AS event_type, s.w AS weight,
-       CAST(tot.quota AS BIGINT) AS quota, s.n_swings,
-       CAST(CASE WHEN norm.ts > 0
-                 THEN s.n_swings * 1000000 // norm.ts END AS BIGINT)
-           AS banzhaf_e6,
-       s.w >= tot.quota AS is_dictator,
-       (SELECT sum(w) FROM ty) - s.w < tot.quota AS has_veto
-FROM swings s, tot, norm
-"""
-
-
-@register("q_events_banzhaf_power", _BANZHAF_SQL)
-def q_events_banzhaf_power(spark, sf_dir):
-    """Banzhaf voting-power index (Penrose 1946 / Banzhaf 1965) of the
-    five event types as weighted voters (weight = event count, quota =
-    majority): a player's power is the number of coalitions it SWINGS
-    — decisive membership, not raw weight, which is the whole point
-    (power is famously non-proportional to weight). All 32 coalitions
-    enumerated flat, swing counts exact, normalized index one floor
-    division; dictator and veto flags pin the boundary cases. The
-    cooperative-game complement of q_events_shapley_attribution's
-    value-division view."""
-    e = _t(spark, sf_dir, "events")
-    ty = (e.groupBy(F.col("event_type").alias("t"))
-          .agg(F.count(F.lit(1)).cast("long").alias("w")))
-    rows = sorted(ty.collect(), key=lambda r: r["t"])
-    ws = [int(r["w"]) for r in rows]
-    names = [r["t"] for r in rows]
-    k = len(ws)
-    tw = sum(ws)
-    quota = tw // 2 + 1
-    swings = [0] * k
-    for mask in range(1 << k):
-        cwt = sum(ws[i] for i in range(k) if mask & (1 << i))
-        for i in range(k):
-            if not mask & (1 << i) and cwt < quota \
-                    and cwt + ws[i] >= quota:
-                swings[i] += 1
-    ts = sum(swings)
-    out = [(names[i], ws[i], quota, swings[i],
-            swings[i] * 10 ** 6 // ts if ts else None,
-            ws[i] >= quota, tw - ws[i] < quota) for i in range(k)]
-    return spark.createDataFrame(
-        out, "event_type string, weight long, quota long,"
-             " n_swings long, banzhaf_e6 long, is_dictator boolean,"
-             " has_veto boolean")
-
-
-_KADANE_SQL = """
-WITH d AS (
-  SELECT CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS rn,
-         CAST(c AS HUGEINT) AS x, day
-  FROM (SELECT CAST(ts AS DATE) AS day, count(*) AS c
-        FROM events GROUP BY 1)
-), g AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(x) AS t FROM d
-), z AS (
-  -- demeaned at n-scale: z = n·x − Σx (exact integers)
-  SELECT rn, day, g.n * d.x - g.t AS z FROM d, g
-), p0 AS (
-  SELECT rn, day, z, sum(z) OVER (ORDER BY rn) AS pref FROM z
-), p AS (
-  SELECT rn, day, z, pref,
-         coalesce(min(pref)
-                  OVER (ORDER BY rn ROWS BETWEEN UNBOUNDED PRECEDING
-                        AND 1 PRECEDING), 0) AS minp
-  FROM p0
-), best AS (
-  SELECT rn, day, CAST(pref - minp AS HUGEINT) AS gain FROM p
-), mx AS (
-  SELECT max(gain) AS mg FROM best
-)
-SELECT b.rn AS end_idx, b.day AS end_day,
-       CAST(b.gain AS BIGINT) AS window_gain_nscale,
-       CAST(mx.mg AS BIGINT) AS best_gain_nscale,
-       b.gain = mx.mg AS is_best
-FROM best b, mx
-"""
-
-
-@register("q_events_max_subarray", _KADANE_SQL)
-def q_events_max_subarray(spark, sf_dir):
-    """Maximum-sum contiguous window (Kadane/Bentley 1984) of the
-    DEMEANED daily event counts — the densest burst relative to the
-    series mean, the interval-shaped complement of the point-shaped
-    changepoint family. Formulated for distribution: with prefix sums
-    P, the best window ending at j is P_j − min_{i<j} P_i, so the
-    whole O(n) answer is ONE running-sum window + ONE running-min
-    window — no sequential fold, unlike the textbook loop. Demeaning
-    at n-scale (z = n·x − Σx) keeps everything exact integers. Every
-    per-day ending-here gain is emitted with the argmax flagged, so
-    the hash pins the full Kadane trajectory."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d = (e.groupBy(F.to_date("ts").alias("day"))
-         .agg(F.count(F.lit(1)).alias("c"))
-         .select(F.row_number().over(Window.orderBy("day"))
-                 .cast("long").alias("rn"), "day",
-                 F.col("c").cast(dec).alias("x")))
-    g = d.agg(F.count(F.lit(1)).cast(dec).alias("n"),
-              F.sum("x").alias("t"))
-    z = (d.crossJoin(F.broadcast(g))
-         .select("rn", "day",
-                 (F.col("n") * F.col("x") - F.col("t")).alias("z")))
-    wo = Window.orderBy("rn")
-    wprev = Window.orderBy("rn").rowsBetween(Window.unboundedPreceding,
-                                             -1)
-    p = (z.withColumn("pref", F.sum("z").over(wo))
-         .withColumn("minp", F.coalesce(F.min("pref").over(wprev),
-                                        F.lit(0).cast(dec))))
-    best = p.select("rn", "day",
-                    (F.col("pref") - F.col("minp")).alias("gain"))
-    mx = best.agg(F.max("gain").alias("mg"))
-    return (best.crossJoin(F.broadcast(mx))
-            .select(F.col("rn").alias("end_idx"),
-                    F.col("day").alias("end_day"),
-                    F.col("gain").cast("long")
-                    .alias("window_gain_nscale"),
-                    F.col("mg").cast("long").alias("best_gain_nscale"),
-                    (F.col("gain") == F.col("mg")).alias("is_best")))
-
-
-_LIS_SQL = """
-WITH RECURSIVE d AS (
-  SELECT CAST(row_number() OVER (ORDER BY day) AS INTEGER) AS rn,
-         CAST(c AS BIGINT) AS x
-  FROM (SELECT CAST(ts AS DATE) AS day, count(*) AS c
-        FROM events GROUP BY 1)
-), n AS (SELECT max(rn) AS n FROM d),
-xs AS (SELECT list(x ORDER BY rn) AS xl FROM d),
-st AS (
-  SELECT 0 AS i, CAST([] AS BIGINT[]) AS lis, xs.xl AS xl
-  FROM xs
-  UNION ALL
-  SELECT s.i + 1,
-         list_append(s.lis, 1 + coalesce(list_max(
-           list_transform(range(1, s.i + 1), j ->
-             CASE WHEN s.xl[j] < s.xl[s.i + 1]
-                  THEN s.lis[j] ELSE 0 END)), 0)),
-         s.xl
-  FROM st s WHERE s.i < (SELECT n FROM n)
-), fin AS (
-  SELECT lis FROM st ORDER BY i DESC LIMIT 1
-)
-SELECT d.rn AS day_idx, d.x AS daily_count,
-       CAST(f.lis[d.rn] AS BIGINT) AS lis_ending_here,
-       CAST(list_max(f.lis) AS BIGINT) AS lis_length
-FROM d, fin f
-"""
-
-
-@register("q_events_lis", _LIS_SQL)
-def q_events_lis(spark, sf_dir):
-    """Longest strictly-increasing subsequence of the daily event-count
-    series (the Erdős-Szekeres / patience-sorting classic): per-day DP
-    value L(i) = 1 + max{L(j): j<i, x_j < x_i}, all exact integers,
-    the full DP trajectory emitted with the global LIS length — the
-    monotone-structure statistic next to q_events_turning_points
-    (which counts direction flips) and q_events_mann_kendall (which
-    sums them). Engine: bounded driver DP over the ≤31-day series;
-    oracle: an append-only list recursion, one day per step."""
-    e = _t(spark, sf_dir, "events")
-    rows = sorted((e.groupBy(F.to_date("ts").alias("day"))
-                   .agg(F.count(F.lit(1)).alias("c"))).collect(),
-                  key=lambda r: r["day"])
-    xs = [int(r["c"]) for r in rows]
-    lis = []
-    for i, x in enumerate(xs):
-        best = 0
-        for j in range(i):
-            if xs[j] < x and lis[j] > best:
-                best = lis[j]
-        lis.append(best + 1)
-    m = max(lis) if lis else 0
-    out = [(i + 1, xs[i], lis[i], m) for i in range(len(xs))]
-    return spark.createDataFrame(
-        out, "day_idx int, daily_count long, lis_ending_here long,"
-             " lis_length long")
-
-
-def _xz_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the XZ container walk: stream counts and uncompressed
-    totals from the pure xz_doc_spec formulas; container byte counts
-    from the pinned stdlib writer; CRC/echo verdicts pinned TRUE (the
-    writer is the real xz implementation, so its integrity metadata is
-    valid by construction — corruption paths are unit-tested)."""
-    from knowledge_extraction_pipeline_spark.sources.xzfile import (
-        build_xz,
-        xz_doc_spec,
-    )
-    rows = []
-    for i in range(n):
-        spec = xz_doc_spec(i, seed)
-        rows.append(
-            f"({i}, {len(spec)}, {len(spec)},"
-            f" {sum(len(c) for c in spec)}, {len(build_xz(i, seed))},"
-            f" 1, TRUE, TRUE)")
-    return (
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id,"
-        " CAST(n_streams AS INTEGER) AS n_streams,"
-        " CAST(n_blocks AS INTEGER) AS n_blocks,"
-        " CAST(uncompressed_total AS BIGINT) AS uncompressed_total,"
-        " CAST(container_bytes AS INTEGER) AS container_bytes,"
-        " CAST(check_type AS INTEGER) AS check_type, index_crcs_ok,"
-        " flags_echo_ok"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(doc_id, n_streams, n_blocks, uncompressed_total,"
-        " container_bytes, check_type, index_crcs_ok, flags_echo_ok)")
-
-
-@register("multimodal_xz_container", _xz_fixture_sql())
-def multimodal_xz_container(spark, sf_dir):
-    """XZ container walk over real stdlib-lzma-written files
-    (sources/xzfile.parse_xz): stream-by-stream BACKWARD navigation —
-    footer magic/CRC, backward-size → index, per-block
-    unpadded/uncompressed varint records with padding rules and a
-    VERIFIED index CRC32, then the stream header whose flags must echo
-    the footer's (checked). Concatenated streams (1-3 per file)
-    exercise the multi-stream loop; the LZMA2 payload itself is
-    honestly refused — container accounting, not compressed-math, is
-    the ingestion skill. One mapInPandas over the binary column."""
-    from .sources.xzfile import synthetic_xz_files, xz_manifest
-    return xz_manifest(synthetic_xz_files(spark, 30))
-
-
-def _bplist_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the binary-plist walk: all columns from the pure
-    bplist_doc_spec formulas (n_objects = 20 with plistlib's
-    uniquing for this fixture shape, pinned by the smoke test)."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.bplistfile import (
-        bplist_doc_spec,
-    )
-    rows = []
-    for i in range(n):
-        s = bplist_doc_spec(i, seed)
-        keys = "blob,count,flags,name,nested,unicode_name"
-        rows.append(
-            f"({i}, 20, '{keys}', '{s['name']}', {s['count']},"
-            f" {len(s['flags'])}, {sum(1 for f in s['flags'] if f)},"
-            f" '{_h.md5(s['blob']).hexdigest()}', 3,"
-            f" '{s['unicode_name']}')")
-    return (
-        "SELECT CAST(doc_id AS BIGINT) AS doc_id,"
-        " CAST(n_objects AS INTEGER) AS n_objects, top_keys, name,"
-        " CAST(count AS BIGINT) AS count,"
-        " CAST(n_flags AS INTEGER) AS n_flags,"
-        " CAST(n_true_flags AS INTEGER) AS n_true_flags, blob_md5,"
-        " CAST(nested_depth AS INTEGER) AS nested_depth, unicode_name"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(doc_id, n_objects, top_keys, name, count, n_flags,"
-        " n_true_flags, blob_md5, nested_depth, unicode_name)")
-
-
-@register("multimodal_bplist_records", _bplist_fixture_sql())
-def multimodal_bplist_records(spark, sf_dir):
-    """Binary property-list walk over real stdlib-plistlib-written
-    files (sources/bplistfile.parse_bplist): trailer-first navigation
-    (offset-int and object-ref widths, object count, top id, offset
-    table), then marker-nibble decode — 2ⁿ-byte big-endian ints
-    (fixtures straddle the 1/2/4/8-byte widths), ASCII vs UTF-16BE
-    strings, data blobs, arrays and dicts via ref-width references
-    with cycle-bounded descent, and the 0xF length escape. Reals,
-    dates and sets are honestly refused. The mobile/app-export data
-    surface: one mapInPandas over the binary column."""
-    from .sources.bplistfile import bplist_manifest, synthetic_bplists
-    return bplist_manifest(synthetic_bplists(spark, 30))
-
-
-_COLORING_SQL = """
-WITH RECURSIVE m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {lex}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= {min_cooc}
-), nodes AS (
-  SELECT DISTINCT term FROM (SELECT a AS term FROM e
-                             UNION SELECT b FROM e)
-), deg AS (
-  SELECT n.term, CAST(count(*) AS BIGINT) AS d
-  FROM nodes n JOIN (SELECT a AS x, b AS y FROM e
-                     UNION SELECT b, a FROM e) bd ON bd.x = n.term
-  GROUP BY 1
-), ty AS (
-  SELECT term, d,
-         CAST(row_number() OVER (ORDER BY d DESC, term) AS INTEGER)
-             AS ord
-  FROM deg
-), nn AS (
-  SELECT x.ord AS i, y.ord AS j,
-         CAST(CASE WHEN EXISTS (
-           SELECT 1 FROM e WHERE (e.a = x.term AND e.b = y.term)
-                              OR (e.a = y.term AND e.b = x.term))
-         THEN 1 ELSE 0 END AS INTEGER) AS adj
-  FROM ty x, ty y
-), consts AS (
-  SELECT (SELECT list(l ORDER BY i) FROM (
-            SELECT i, list(adj ORDER BY j) AS l FROM nn GROUP BY i) q)
-      AS mat,
-         (SELECT CAST(count(*) AS INTEGER) FROM ty) AS k
-), st AS (
-  SELECT 0 AS i, list_transform(range(1, c.k + 1), x -> 0) AS col,
-         c.mat AS mat, c.k AS k
-  FROM consts c
-  UNION ALL
-  SELECT s.i + 1,
-         list_transform(range(1, s.k + 1), x ->
-           CASE WHEN x = s.i + 1 THEN
-             CAST(list_position(
-               list_transform(range(1, s.k + 1), cc ->
-                 CASE WHEN list_sum(list_transform(range(1, s.k + 1),
-                        j -> CASE WHEN s.mat[s.i + 1][j] = 1
-                                   AND s.col[j] = cc
-                             THEN 1 ELSE 0 END)) = 0
-                 THEN 1 ELSE 0 END), 1) AS INTEGER)
-           ELSE s.col[x] END),
-         s.mat, s.k
-  FROM st s WHERE s.i < s.k
-), fin AS (SELECT col, k FROM st ORDER BY i DESC LIMIT 1)
-SELECT ty.term, CAST(ty.d AS BIGINT) AS degree, ty.ord AS greedy_order,
-       CAST(f.col[ty.ord] AS INTEGER) AS color,
-       CAST(list_max(f.col) AS INTEGER) AS n_colors
-FROM ty, fin f
-""".format(lex=kg_docs.lexicon_values_sql(),
-           min_cooc=kg_docs.MIN_COOCCURRENCES)
-
-
-@register("kg_greedy_coloring_docs", _COLORING_SQL)
-def kg_greedy_coloring_docs(spark, sf_dir):
-    """Welsh-Powell greedy coloring (1967) of the co-occurrence graph:
-    nodes in degree-descending (term-tiebroken) order each take the
-    SMALLEST color unused among already-colored neighbors — the
-    conflict-free scheduling primitive (χ colors = χ parallel rounds
-    for mutually-exclusive updates), guaranteed ≤ Δ+1 and, via the
-    degeneracy ordering already in the registry (kg_degeneracy_docs),
-    ≤ degeneracy+1. The assignment is inherently sequential, so the
-    engine replays it over the bounded vocabulary projection while the
-    oracle runs the identical one-node-per-step list recursion with a
-    nested-lambda smallest-free-color search. Full coloring + color
-    count emitted."""
-    from .operators.kg_docs import MIN_COOCCURRENCES
-    edges = _cooc_edges(spark, sf_dir, MIN_COOCCURRENCES)
-    rows = edges.select("term_a", "term_b").collect()
-    adj: dict[str, set] = {}
-    for r in rows:
-        adj.setdefault(r["term_a"], set()).add(r["term_b"])
-        adj.setdefault(r["term_b"], set()).add(r["term_a"])
-    order = sorted(adj, key=lambda t: (-len(adj[t]), t))
-    color: dict[str, int] = {}
-    for t in order:
-        used = {color[n] for n in adj[t] if n in color}
-        c = 1
-        while c in used:
-            c += 1
-        color[t] = c
-    n_colors = max(color.values())
-    out = [(t, len(adj[t]), i + 1, color[t], n_colors)
-           for i, t in enumerate(order)]
-    return spark.createDataFrame(
-        out, "term string, degree long, greedy_order int, color int,"
-             " n_colors int")
-
-
-_RANSAC_SQL = """
-WITH d AS (
-  SELECT CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS x,
-         CAST(c AS BIGINT) AS y
-  FROM (SELECT CAST(ts AS DATE) AS day, count(*) AS c
-        FROM events GROUP BY 1)
-), sig AS (
-  -- integer inlier tolerance: t² = Σ(y−ȳ)²·n-scaled /(25·n³)
-  -- (σ/5 in the same cross-multiplied form the SampEn query uses)
-  SELECT CAST(count(*) AS HUGEINT) AS n, sum(y) AS t,
-         sum(y * y) AS sq
-  FROM d
-), cand AS (
-  SELECT a.x AS x1, a.y AS y1, b.x AS x2, b.y AS y2,
-         b.y - a.y AS dy, b.x - a.x AS dx
-  FROM d a JOIN d b ON a.x < b.x
-), scored AS (
-  SELECT c.x1, c.x2,
-         CAST(sum(CASE WHEN
-           25 * s.n * (c.dy * p.x - c.dx * p.y
-                       + c.dx * c.y1 - c.dy * c.x1)
-             * (c.dy * p.x - c.dx * p.y + c.dx * c.y1 - c.dy * c.x1)
-           <= c.dx * c.dx * (s.n * s.sq - s.t * s.t)
-           THEN 1 ELSE 0 END) AS BIGINT) AS inliers
-  FROM cand c, d p, sig s
-  GROUP BY c.x1, c.x2
-), best AS (
-  SELECT x1, x2, inliers FROM scored
-  ORDER BY inliers DESC, x1, x2 LIMIT 1
-)
-SELECT b.x1 AS anchor1_idx, b.x2 AS anchor2_idx, b.inliers,
-       CAST((SELECT n FROM sig) AS BIGINT) AS n_days,
-       CAST(b.inliers * 1000000 // (SELECT n FROM sig) AS BIGINT)
-           AS consensus_e6
-FROM best b
-"""
-
-
-@register("q_events_ransac_line", _RANSAC_SQL)
-def q_events_ransac_line(spark, sf_dir):
-    """EXHAUSTIVE deterministic RANSAC (Fischler-Bolles 1981, with the
-    random sampling replaced by ALL C(n,2) minimal sets — exactness
-    instead of probability at this series length): every day pair
-    anchors a candidate line, inliers are counted under the
-    cross-multiplied integer test 25n·(vertical residual·dx)² ≤
-    dx²·(nΣy²−(Σy)²) (tolerance σ/5, zero floats), and the maximum-
-    consensus line wins with (x1,x2) tiebreak — the robust-fit
-    complement of q_events_theil_sen, which takes a median where
-    RANSAC takes a vote. One flat pair×point join, all map-side
-    combinable."""
-    e = _t(spark, sf_dir, "events")
-    dec = "decimal(38,0)"
-    d = (e.groupBy(F.to_date("ts").alias("day"))
-         .agg(F.count(F.lit(1)).alias("c"))
-         .select(F.row_number().over(Window.orderBy("day"))
-                 .cast(dec).alias("x"),
-                 F.col("c").cast(dec).alias("y")))
-    sig = d.agg(F.count(F.lit(1)).cast(dec).alias("n"),
-                F.sum("y").alias("t"),
-                F.sum(F.col("y") * F.col("y")).alias("sq"))
-    a, b = d.alias("a"), d.alias("b")
-    cand = (a.join(b, F.col("a.x") < F.col("b.x"))
-            .select(F.col("a.x").alias("x1"), F.col("a.y").alias("y1"),
-                    F.col("b.x").alias("x2"),
-                    (F.col("b.y") - F.col("a.y")).alias("dy"),
-                    (F.col("b.x") - F.col("a.x")).alias("dx")))
-    p = d.select(F.col("x").alias("px"), F.col("y").alias("py"))
-    res = (F.col("dy") * F.col("px") - F.col("dx") * F.col("py")
-           + F.col("dx") * F.col("y1") - F.col("dy") * F.col("x1"))
-    hit = (F.lit(25).cast(dec) * F.col("n") * res * res
-           <= F.col("dx") * F.col("dx")
-           * (F.col("n") * F.col("sq") - F.col("t") * F.col("t")))
-    scored = (cand.crossJoin(p).crossJoin(F.broadcast(sig))
-              .groupBy("x1", "x2")
-              .agg(F.sum(F.when(hit, 1).otherwise(0)).cast("long")
-                   .alias("inliers")))
-    best = (scored.orderBy(F.desc("inliers"), "x1", "x2").limit(1))
-    return (best.crossJoin(F.broadcast(sig))
-            .select(F.col("x1").cast("long").alias("anchor1_idx"),
-                    F.col("x2").cast("long").alias("anchor2_idx"),
-                    "inliers", F.col("n").cast("long").alias("n_days"),
-                    F.expr("CAST(inliers * 1000000 div n AS BIGINT)")
-                    .alias("consensus_e6")))
 
 
 _CHATRENDER_SQL = """
@@ -34981,1841 +7425,6 @@ def data_chat_render_mask(spark, sf_dir):
                           lambda x: x.isNotNull())))
                   .alias("spans_md5")))
     return spans.orderBy("user_id", "day").limit(200)
-
-
-_LINDLEY_SQL = """
-WITH RECURSIVE j AS (
-  SELECT CAST(row_number() OVER (ORDER BY ts, event_id) AS BIGINT)
-             AS k,
-         CAST(epoch_us(ts) // 1000000 AS BIGINT) AS arr,
-         CAST(CAST(concat('0x', substr(md5('svc:' || event_id), 1, 8))
-                   AS UBIGINT) % 118 + 3 AS BIGINT) AS svc
-  FROM events ORDER BY ts, event_id LIMIT 300
-), ia AS (
-  SELECT k, svc,
-         coalesce(arr - lag(arr) OVER (ORDER BY k), 0) AS gap
-  FROM j
-), st AS (
-  SELECT CAST(1 AS BIGINT) AS k, CAST(0 AS BIGINT) AS w,
-         (SELECT svc FROM ia WHERE k = 1) AS svc
-  UNION ALL
-  SELECT s.k + 1,
-         greatest(CAST(0 AS BIGINT), s.w + s.svc - i.gap),
-         i.svc
-  FROM st s JOIN ia i ON i.k = s.k + 1
-  WHERE s.k < (SELECT max(k) FROM ia)
-)
-SELECT st.k AS job_idx, st.w AS wait_s, st.svc AS service_s,
-       CAST((SELECT max(w) FROM st) AS BIGINT) AS max_wait_s,
-       CAST((SELECT sum(w) * 1000000 // count(*) FROM st) AS BIGINT)
-           AS mean_wait_e6,
-       CAST((SELECT sum(CASE WHEN w = 0 THEN 1 ELSE 0 END) FROM st)
-            AS BIGINT) AS n_idle_arrivals
-FROM st
-"""
-
-
-@register("q_events_lindley_queue", _LINDLEY_SQL)
-def q_events_lindley_queue(spark, sf_dir):
-    """Lindley recursion (1952) — the EXACT G/G/1 waiting-time replay
-    W_{k+1} = max(0, W_k + S_k − A_{k+1}) over the first 300 events as
-    arrivals with md5-derived deterministic service times (3-120 s):
-    the sample-path complement of q_events_mm1_queue's analytic
-    steady-state formulas, showing the actual transient waits,
-    idle-arrival count and peak backlog this arrival pattern produces.
-    Everything is exact integer epoch-second arithmetic; the full
-    waiting-time trajectory is emitted. Engine: bounded driver fold;
-    oracle: a scalar two-column recursion, one job per step."""
-    e = _t(spark, sf_dir, "events")
-    import hashlib as _h
-    rows = (e.orderBy("ts", "event_id").limit(300)
-            .select(F.unix_timestamp("ts").alias("arr"), "event_id")
-            .collect())
-    jobs = []
-    for r in rows:
-        svc = int.from_bytes(
-            _h.md5(f"svc:{r['event_id']}".encode()).digest()[:4],
-            "big") % 118 + 3
-        jobs.append((int(r["arr"]), svc))
-    w = 0
-    out = []
-    prev_arr = None
-    for k, (arr, svc) in enumerate(jobs, start=1):
-        if k > 1:
-            gap = arr - prev_arr
-            w = max(0, w + prev_svc - gap)
-        out.append((k, w, svc))
-        prev_arr, prev_svc = arr, svc
-    mx = max(x[1] for x in out)
-    mean_e6 = sum(x[1] for x in out) * 10 ** 6 // len(out)
-    idle = sum(1 for x in out if x[1] == 0)
-    final = [(k, wv, sv, mx, mean_e6, idle) for k, wv, sv in out]
-    return spark.createDataFrame(
-        final, "job_idx long, wait_s long, service_s long,"
-               " max_wait_s long, mean_wait_e6 long,"
-               " n_idle_arrivals long")
-
-
-_GEOHASH_SQL = """
-WITH u AS (
-  SELECT DISTINCT user_id FROM events
-), pts AS (
-  SELECT user_id,
-         CAST(CAST(concat('0x', substr(md5('lat:' || user_id), 1, 12))
-                   AS UBIGINT) % 180000000 AS BIGINT) - 90000000
-             AS lat_e6,
-         CAST(CAST(concat('0x', substr(md5('lon:' || user_id), 1, 12))
-                   AS UBIGINT) % 360000000 AS BIGINT) - 180000000
-             AS lon_e6
-  FROM u ORDER BY user_id LIMIT 300
-), bins AS (
-  SELECT user_id, lat_e6, lon_e6,
-         (lat_e6 + 90000000) * 32768 // 180000000 AS latb,
-         (lon_e6 + 180000000) * 32768 // 360000000 AS lonb
-  FROM pts
-), code AS (
-  SELECT user_id, lat_e6, lon_e6,
-         list_sum(list_transform(range(0, 15), j ->
-           (((lonb >> (14 - j)) & 1) << (29 - 2 * j))
-           + (((latb >> (14 - j)) & 1) << (28 - 2 * j)))) AS c
-  FROM bins
-), gh AS (
-  SELECT user_id, lat_e6, lon_e6,
-         (SELECT string_agg(
-             substr('0123456789bcdefghjkmnpqrstuvwxyz',
-                    CAST((c >> (25 - 5 * k)) & 31 AS INTEGER) + 1, 1),
-             '' ORDER BY k)
-          FROM (SELECT unnest(range(0, 6)) AS k)) AS geohash6
-  FROM code
-)
-SELECT g.user_id, g.lat_e6, g.lon_e6, g.geohash6,
-       substr(g.geohash6, 1, 4) AS prefix4,
-       CAST(count(*) OVER (PARTITION BY substr(g.geohash6, 1, 4))
-            AS BIGINT) AS n_in_prefix4
-FROM gh g
-"""
-
-
-@register("q_users_geohash", _GEOHASH_SQL)
-def q_users_geohash(spark, sf_dir):
-    """Geohash encoding (Niemeyer 2008) of synthetic per-user
-    coordinates held in EXACT integer microdegrees: 15+15-bit
-    longitude/latitude bins by floor division, bit-interleaved
-    (longitude first, per the spec) into a 30-bit cell code, rendered
-    in the geohash base32 alphabet — the prefix-shared spatial
-    bucketing primitive (common prefix ⇔ nearby cell) that drives
-    spatial partitioning and neighbor joins, with the 4-char-prefix
-    bucket occupancy emitted. Zero floats anywhere; the md5-derived
-    coordinates are engine-portable by the same u64-prefix discipline
-    as the sampling queries."""
-    e = _t(spark, sf_dir, "events")
-    u = e.select("user_id").distinct().orderBy("user_id").limit(300)
-    u64 = ("CAST(conv(substr(md5(concat('{p}:', user_id)), 1, 12),"
-           " 16, 10) AS DECIMAL(38,0))")
-    pts = u.selectExpr(
-        "user_id",
-        f"CAST({u64.format(p='lat')} % 180000000 AS BIGINT)"
-        " - 90000000 AS lat_e6",
-        f"CAST({u64.format(p='lon')} % 360000000 AS BIGINT)"
-        " - 180000000 AS lon_e6")
-    bins = pts.selectExpr(
-        "user_id", "lat_e6", "lon_e6",
-        "CAST((lat_e6 + 90000000) * 32768 div 180000000 AS BIGINT)"
-        " AS latb",
-        "CAST((lon_e6 + 180000000) * 32768 div 360000000 AS BIGINT)"
-        " AS lonb")
-    code = bins.withColumn("c", F.expr(
-        "aggregate(sequence(0, 14), 0L, (acc, j) -> acc"
-        " + shiftleft(shiftright(lonb, 14 - j) & 1, 29 - 2 * j)"
-        " + shiftleft(shiftright(latb, 14 - j) & 1, 28 - 2 * j))"))
-    gh = code.withColumn("geohash6", F.expr(
-        "concat_ws('', transform(sequence(0, 5), k ->"
-        " substr('0123456789bcdefghjkmnpqrstuvwxyz',"
-        " CAST((shiftright(c, 25 - 5 * k) & 31) AS INT) + 1, 1)))"))
-    w = Window.partitionBy(F.substring("geohash6", 1, 4))
-    return gh.select("user_id", "lat_e6", "lon_e6", "geohash6",
-                     F.substring("geohash6", 1, 4).alias("prefix4"),
-                     F.count(F.lit(1)).over(w).cast("long")
-                     .alias("n_in_prefix4"))
-
-
-def _hilbert_steps_sql(src: str) -> str:
-    """Unrolled 8-level Hilbert xy→d transform (the classic
-    rot-and-accumulate algorithm, verified against the 2×2/4×4 tables
-    in tests) as chained CTEs over columns (x, y, d) — flat per-row
-    arithmetic, no recursion, identical text in both engines. Each
-    level: rx/ry from bit s, d += s²·((3rx) XOR ry), then the ry=0
-    reflect(255−·)-and-swap rotation on the FULL coordinates."""
-    steps = []
-    prev = src
-    for s in (128, 64, 32, 16, 8, 4, 2, 1):
-        steps.append(f""",
-h{s} AS (
-  SELECT user_id, hx, hy, morton,
-         d + {s * s} * (CASE WHEN (y // {s}) % 2 = 1
-                        THEN (CASE WHEN (x // {s}) % 2 = 1
-                              THEN 2 ELSE 1 END)
-                        ELSE (CASE WHEN (x // {s}) % 2 = 1
-                              THEN 3 ELSE 0 END) END) AS d,
-         CASE WHEN (y // {s}) % 2 = 0 THEN
-           (CASE WHEN (x // {s}) % 2 = 1 THEN 255 - y ELSE y END)
-         ELSE x END AS x,
-         CASE WHEN (y // {s}) % 2 = 0 THEN
-           (CASE WHEN (x // {s}) % 2 = 1 THEN 255 - x ELSE x END)
-         ELSE y END AS y
-  FROM {prev}
-)""")
-        prev = f"h{s}"
-    return "".join(steps)
-
-
-_HILBERT_SQL = """
-WITH u AS (SELECT DISTINCT user_id FROM events),
-pts AS (
-  SELECT user_id,
-         CAST(CAST(concat('0x', substr(md5('hx:' || user_id), 1, 12))
-                   AS UBIGINT) % 256 AS BIGINT) AS hx,
-         CAST(CAST(concat('0x', substr(md5('hy:' || user_id), 1, 12))
-                   AS UBIGINT) % 256 AS BIGINT) AS hy
-  FROM u ORDER BY user_id LIMIT 300
-), base AS (
-  SELECT user_id, hx, hy, hx AS x, hy AS y, CAST(0 AS BIGINT) AS d,
-         list_sum(list_transform(range(0, 8), j ->
-           (((hx >> j) & 1) << (2 * j + 1))
-           + (((hy >> j) & 1) << (2 * j)))) AS morton
-  FROM pts
-){steps}, fin AS (
-  SELECT user_id, hx, hy, morton, d AS hilbert FROM h1
-), jumps AS (
-  SELECT abs(hilbert - lag(hilbert) OVER (ORDER BY user_id)) AS hj,
-         abs(morton - lag(morton) OVER (ORDER BY user_id)) AS mj
-  FROM fin
-), loc AS (
-  SELECT CAST(sum(hj) AS BIGINT) AS hjump,
-         CAST(sum(mj) AS BIGINT) AS mjump
-  FROM jumps
-)
-SELECT f.user_id, f.hx, f.hy, CAST(f.hilbert AS BIGINT) AS hilbert_d,
-       CAST(f.morton AS BIGINT) AS morton_d,
-       l.hjump AS total_hilbert_jump, l.mjump AS total_morton_jump
-FROM fin f, loc l
-""".format(steps=_hilbert_steps_sql("base"))
-
-
-@register("q_users_hilbert_curve", _HILBERT_SQL)
-def q_users_hilbert_curve(spark, sf_dir):
-    """Hilbert space-filling curve index (Hilbert 1891 / the classic
-    rot-and-accumulate xy→d algorithm) of 300 synthetic per-user grid
-    points on the 256×256 grid — the locality-preserving layout key
-    that beats the registry's Morton z-order (q_events_zorder_key)
-    because it has no diagonal discontinuities; both indexes are
-    emitted per point plus the total |Δindex| along the user order for
-    each curve, pinning the comparison itself. The 8-level transform
-    is UNROLLED into flat per-row arithmetic (one chained CTE per
-    level, no recursion, verified against the 2×2/4×4 reference
-    tables in unit tests) — fully distributed, zero floats."""
-    e = _t(spark, sf_dir, "events")
-    u = e.select("user_id").distinct().orderBy("user_id").limit(300)
-    u64 = ("CAST(conv(substr(md5(concat('{p}:', user_id)), 1, 12),"
-           " 16, 10) AS DECIMAL(38,0))")
-    pts = u.selectExpr(
-        "user_id",
-        f"CAST({u64.format(p='hx')} % 256 AS BIGINT) AS hx",
-        f"CAST({u64.format(p='hy')} % 256 AS BIGINT) AS hy")
-    df = pts.selectExpr(
-        "user_id", "hx", "hy", "hx AS x", "hy AS y",
-        "CAST(0 AS BIGINT) AS d",
-        "aggregate(sequence(0, 7), 0L, (acc, j) -> acc"
-        " + shiftleft(shiftright(hx, j) & 1, 2 * j + 1)"
-        " + shiftleft(shiftright(hy, j) & 1, 2 * j)) AS morton")
-    for s in (128, 64, 32, 16, 8, 4, 2, 1):
-        df = df.selectExpr(
-            "user_id", "hx", "hy", "morton",
-            f"d + {s * s} * (CASE WHEN (y div {s}) % 2 = 1"
-            f" THEN (CASE WHEN (x div {s}) % 2 = 1 THEN 2 ELSE 1 END)"
-            f" ELSE (CASE WHEN (x div {s}) % 2 = 1 THEN 3 ELSE 0 END)"
-            f" END) AS d",
-            f"CASE WHEN (y div {s}) % 2 = 0 THEN"
-            f" (CASE WHEN (x div {s}) % 2 = 1 THEN 255 - y ELSE y END)"
-            f" ELSE x END AS x",
-            f"CASE WHEN (y div {s}) % 2 = 0 THEN"
-            f" (CASE WHEN (x div {s}) % 2 = 1 THEN 255 - x ELSE x END)"
-            f" ELSE y END AS y")
-    fin = df.select("user_id", "hx", "hy", "morton",
-                    F.col("d").alias("hilbert"))
-    w = Window.orderBy("user_id")
-    loc = fin.select(
-        F.abs(F.col("hilbert") - F.lag("hilbert").over(w)).alias("hj"),
-        F.abs(F.col("morton") - F.lag("morton").over(w)).alias("mj")) \
-        .agg(F.sum("hj").cast("long").alias("hjump"),
-             F.sum("mj").cast("long").alias("mjump"))
-    return (fin.crossJoin(F.broadcast(loc))
-            .select("user_id", "hx", "hy",
-                    F.col("hilbert").cast("long").alias("hilbert_d"),
-                    F.col("morton").cast("long").alias("morton_d"),
-                    F.col("hjump").alias("total_hilbert_jump"),
-                    F.col("mjump").alias("total_morton_jump")))
-
-
-_BWT_INV_SQL = """
-WITH RECURSIVE d AS (
-  SELECT regexp_replace(lower(substr(text, 1, 200)), '[^a-z ]', '', 'g')
-         || '!' AS s
-  FROM documents ORDER BY doc_id LIMIT 1
-), idx AS (
-  SELECT CAST(unnest(range(1, length((SELECT s FROM d)) + 1))
-              AS INTEGER) AS i
-), rot AS (
-  SELECT i AS start_idx,
-         substr(d.s, i) || substr(d.s, 1, i - 1) AS r, d.s AS s
-  FROM idx, d
-), ranked AS (
-  SELECT CAST(row_number() OVER (ORDER BY r) AS INTEGER) AS rank,
-         start_idx, substr(r, length(s), 1) AS ch
-  FROM rot
-), lf AS (
-  -- LF mapping: occurrence-rank of each last-column char equals its
-  -- occurrence-rank in the first column; first column = sorted chars
-  SELECT rank, ch,
-         CAST(row_number() OVER (ORDER BY ch, rank) AS INTEGER)
-             AS first_pos
-  FROM ranked
-), orig AS (
-  SELECT rank AS pos FROM ranked
-  WHERE start_idx = 1
-), walk AS (
-  -- reconstruct BACKWARD from the rotation starting at position 1:
-  -- its last char is the sentinel's predecessor chain
-  SELECT 0 AS k, (SELECT pos FROM orig) AS pos,
-         CAST('' AS VARCHAR) AS acc
-  UNION ALL
-  SELECT w.k + 1, lf.first_pos, lf.ch || w.acc
-  FROM walk w JOIN lf ON lf.rank = w.pos
-  WHERE w.k < (SELECT length(s) FROM d)
-), rec AS (
-  SELECT acc FROM walk ORDER BY k DESC LIMIT 1
-)
-SELECT CAST(length(d.s) AS INTEGER) AS n_chars,
-       md5(d.s) AS original_md5,
-       md5(rec.acc) AS reconstructed_md5,
-       rec.acc = d.s AS roundtrip_ok
-FROM d, rec
-"""
-
-
-@register("text_bwt_inverse", _BWT_INV_SQL)
-def text_bwt_inverse(spark, sf_dir):
-    """Burrows-Wheeler INVERSE transform — the half that makes BWT a
-    codec rather than a curiosity: reconstruct the original string
-    from nothing but the last column via LF-mapping (the k-th
-    occurrence of c in the last column IS the k-th occurrence of c in
-    the sorted first column), walking the permutation one character
-    per step. Completes text_bwt_runs with a pinned round-trip proof:
-    original md5, reconstructed md5 and their equality are all
-    emitted, so a rank slip anywhere in the mapping flips the result.
-    Engine: bounded driver walk over the 201-char pinned prefix;
-    oracle: the identical walk as a string-accumulating recursion."""
-    import hashlib as _h
-    import re as _re
-
-    docs = (_t(spark, sf_dir, "documents").orderBy("doc_id").limit(1)
-            .select("text").collect())
-    s = _re.sub(r"[^a-z ]", "", docs[0]["text"][:200].lower()) + "!"
-    n = len(s)
-    rots = sorted(range(1, n + 1),
-                  key=lambda i: s[i - 1:] + s[:i - 1])
-    last = [s[(i - 2) % n] for i in rots]
-    # first_pos by (char, rank-order) — stable occurrence pairing
-    order = sorted(range(n), key=lambda r: (last[r], r))
-    first_pos = [0] * n
-    for fp, r in enumerate(order, start=1):
-        first_pos[r] = fp
-    pos = rots.index(1) + 1
-    acc = []
-    for _ in range(n):
-        acc.append(last[pos - 1])
-        pos = first_pos[pos - 1]
-    rec = "".join(reversed(acc))
-    out = [(n, _h.md5(s.encode()).hexdigest(),
-            _h.md5(rec.encode()).hexdigest(), rec == s)]
-    return spark.createDataFrame(
-        out, "n_chars int, original_md5 string,"
-             " reconstructed_md5 string, roundtrip_ok boolean")
-
-
-_JL_SQL = """
-WITH e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-  ORDER BY vec_id LIMIT 20
-), dims AS (
-  SELECT CAST(len((SELECT v FROM e LIMIT 1)) AS INTEGER) AS nd
-), proj AS (
-  SELECT e.vec_id, k.k,
-         list_sum(list_transform(range(1, dims.nd + 1), j ->
-           v[CAST(j AS INTEGER)]
-           * (CASE WHEN substr(md5('jl:' || k.k || ':'
-                                || CAST(j AS INTEGER)), 16, 1)
-                   IN ('0','2','4','6','8','a','c','e')
-              THEN 1.0 ELSE -1.0 END))) AS p
-  FROM e, dims, (SELECT CAST(unnest(range(0, 8)) AS INTEGER) AS k) k
-  GROUP BY e.vec_id, k.k, dims.nd, e.v
-), pv AS (
-  SELECT vec_id, list(p ORDER BY k) AS pv FROM proj GROUP BY vec_id
-), pairs AS (
-  SELECT a.vec_id AS ida, b.vec_id AS idb,
-         list_sum(list_transform(range(1, len(a.v) + 1), j ->
-           (a.v[CAST(j AS INTEGER)] - b.v[CAST(j AS INTEGER)])
-           * (a.v[CAST(j AS INTEGER)] - b.v[CAST(j AS INTEGER)])))
-             AS d2,
-         list_sum(list_transform(range(1, 9), j ->
-           (pa.pv[CAST(j AS INTEGER)] - pb.pv[CAST(j AS INTEGER)])
-           * (pa.pv[CAST(j AS INTEGER)] - pb.pv[CAST(j AS INTEGER)])))
-             AS pd2
-  FROM e a JOIN e b ON a.vec_id < b.vec_id
-  JOIN pv pa ON pa.vec_id = a.vec_id
-  JOIN pv pb ON pb.vec_id = b.vec_id
-)
-SELECT ida, idb, round(d2, 9) AS dist_sq,
-       round(pd2 / 8, 9) AS proj_dist_sq_scaled,
-       round(pd2 / 8 / d2, 6) AS distortion_ratio
-FROM pairs
-"""
-
-
-@register("ann_jl_projection", _JL_SQL)
-def ann_jl_projection(spark, sf_dir):
-    """Johnson-Lindenstrauss random projection with Achlioptas (2003)
-    ±1 signs (md5 hex-digit parity — database-friendly, no Gaussians):
-    the first 20 embeddings projected to 8 dimensions, with every
-    pairwise squared distance emitted next to its (1/k)-scaled
-    projected counterpart and the distortion ratio the JL lemma bounds
-    — the dimensionality-reduction audit run before committing an ANN
-    index to a reduced space. Sign expressions are shared verbatim
-    with the AMS sketch discipline; all arithmetic is IEEE-identical
-    across engines with round-6/9 only at the emission boundary."""
-    emb = (_t(spark, sf_dir, "embeddings").orderBy("vec_id").limit(20)
-           .select("vec_id",
-                   F.col("embedding").cast("array<double>").alias("v")))
-    nd = len(emb.select("v").first()["v"])
-    ks = spark.range(0, 8).select(F.col("id").cast("int").alias("k"))
-    sign = F.when(
-        F.substring(F.md5(F.concat(F.lit("jl:"), F.col("k"),
-                                   F.lit(":"), F.col("j"))), 16, 1)
-        .isin("0", "2", "4", "6", "8", "a", "c", "e"),
-        F.lit(1.0)).otherwise(F.lit(-1.0))
-    proj = (emb.crossJoin(F.broadcast(ks))
-            .select("vec_id", "k", F.posexplode("v").alias("j0", "x"))
-            .select("vec_id", "k", (F.col("j0") + 1).alias("j"), "x")
-            .select("vec_id", "k", (F.col("x") * sign).alias("t"))
-            .groupBy("vec_id", "k").agg(F.sum("t").alias("p")))
-    pv = (proj.groupBy("vec_id")
-          .agg(F.array_sort(F.collect_list(F.struct("k", "p")))
-               .getField("p").alias("pv")))
-    a = emb.alias("a")
-    b = emb.alias("b")
-    d2 = F.expr("aggregate(zip_with(a.v, b.v, (x, y) -> (x-y)*(x-y)),"
-                " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
-    pd2 = F.expr("aggregate(zip_with(pa.pv, pb.pv,"
-                 " (x, y) -> (x-y)*(x-y)),"
-                 " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)")
-    pairs = (a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
-             .join(pv.alias("pa"),
-                   F.col("pa.vec_id") == F.col("a.vec_id"))
-             .join(pv.alias("pb"),
-                   F.col("pb.vec_id") == F.col("b.vec_id"))
-             .select(F.col("a.vec_id").alias("ida"),
-                     F.col("b.vec_id").alias("idb"),
-                     d2.alias("d2"), pd2.alias("pd2")))
-    return pairs.select(
-        "ida", "idb", F.round("d2", 9).alias("dist_sq"),
-        F.round(F.col("pd2") / 8, 9).alias("proj_dist_sq_scaled"),
-        F.round(F.col("pd2") / 8 / F.col("d2"), 6)
-        .alias("distortion_ratio"))
-
-
-# ───────────────────────── registry ordering ─────────────────────────
-
-# Names already snapshotted green (3/3: rows + schema + value hash) in the
-# round-4 official driver artifact, CORRECTNESS_r04.json. That artifact
-# truncated at the first 50 registry entries, so the registry is re-ordered
-# to put every not-yet-officially-snapshotted query FIRST (original relative
-# order preserved within each group): whatever prefix the driver snapshots
-# this round, successive rounds' artifacts jointly cover the whole registry,
-# and the already-evidenced 50 are re-checked last.
-_OFFICIALLY_COVERED_R4 = [
-    "q1_pricing_summary", "q_revenue_by_nation", "q_top_parts",
-    "q_order_priority_semijoin", "q_customers_no_orders_antijoin",
-    "q_events_sessionize", "q_events_running_window", "q_events_json_extract",
-    "q_segment_distinct_agg", "q_rollup_orders", "q_setops_repeat_customers",
-    "q_events_range_join", "q_events_quantiles", "q_events_asof_join",
-    "q_events_asof_bucketed", "kg_mentions_docs", "kg_cooccur_docs",
-    "kg_typed_edges_docs", "kg_degree_docs", "kg_link_prediction_docs",
-    "kg_triangles_docs", "kg_pagerank_docs", "kg_centrality_docs",
-    "kg_pagerank_weighted_docs", "kg_negative_samples", "kg_communities_docs",
-    "kg_khop_docs", "dedup_exact_docs", "dedup_ngram_jaccard_docs",
-    "dedup_embedding_cosine", "dedup_minhash_docs", "dedup_simhash_docs",
-    "tfidf_similar_docs", "ann_topk_cosine", "ann_topk_filtered",
-    "ann_lsh_topk", "ann_ivf_topk", "ann_pq_topk", "ann_ivfpq_residual_topk",
-    "search_bm25", "text_corpus_stats", "text_tokens_fingerprint",
-    "text_lang_quality", "text_pii_redact", "text_repetition_stats",
-    "data_hash_split", "text_contamination", "text_domain_budget",
-    "text_textrank_keywords", "data_pack_sequences",
-]
-
-
-# Per-query wall at the driver's gate scale (sf0.01), measured by the full
-# 215/215 sweep BENCH/sweep_r05_gate_final.log. Used ONLY to order the
-# registry (below) — never to select, skip, or alter a query.
-_GATE_WALL_S = {
-    "text_js_divergence": 7.0, "q_events_cusum": 1.9,
-    "q_part_price_elasticity": 1.1,
-    "multimodal_tga_features": 2.9, "multimodal_g711_features": 1.0,
-    "dedup_damerau_docs": 13.4, "q_part_name_jw_match": 1.2,
-    "q_events_shapley_attribution": 9.5,
-    "multimodal_qoi_features": 6.5, "kg_eigencentrality_docs": 8.7,
-    "q_events_moments_profile": 1.7, "q_events_holtwinters_forecast": 7.3,
-    "q_events_theil_sen": 7.9, "q_events_mann_kendall": 2.2,
-    "multimodal_alaw_features": 1.0, "multimodal_aiff_features": 0.7,
-    "q_events_auc_roc": 7.8, "q_events_gains_deciles": 1.7,
-    "q_events_mutual_information": 9.1, "q_events_target_encoding": 1.9,
-    "q_events_isotonic_calibration": 9.8, "text_naive_bayes_lang": 8.9,
-    "q_events_decision_stump": 11.0,
-    "q_events_imr_chart": 8.6, "q_events_brier_score": 3.4,
-    "q_events_wilcoxon_signed_rank": 7.2, "q_events_anova_f": 0.8,
-    "q_events_kendall_tau": 1.4, "q_events_mcnemar": 6.5,
-    "q_docs_cohen_kappa": 0.8, "q_events_logrank": 2.7,
-    "dedup_edit_distance_docs": 14.0, "q_events_tukey_fences": 2.7,
-    "q_customer_theil_atkinson": 2.7,
-    "multimodal_ico_entries": 8.8, "q_orders_bullwhip": 4.1,
-    "q_events_funnel_timed": 2.1, "ann_pq_distortion": 6.4,
-    "q_orders_split_shipments": 1.0, "q_events_dormancy": 0.7,
-    "q_lineitem_returns_by_month": 0.5, "q_events_wilson_ci": 0.6,
-    "q_events_activation_rate": 0.9,
-    "ann_embedding_profile": 0.4, "ann_ivf_topk": 4.3,
-    "ann_ivfpq_residual_topk": 14.1, "ann_kmeans_assign": 1.1,
-    "ann_kmeans_inertia": 1.8, "ann_kmeans_update": 3.6,
-    "ann_knn_graph": 6.7,
-    "ann_label_centroids": 0.5, "ann_label_separation": 19.8,
-    "ann_lsh_topk": 1.7, "ann_mmr_topk": 2.2,
-    "ann_pca_top_component": 3.8, "ann_pq_topk": 8.9,
-    "ann_centroid_distances": 2.5,
-    "ann_range_search": 1.1, "ann_silhouette_simplified": 3.8,
-    "ann_topk_cosine": 0.5,
-    "ann_topk_filtered": 0.4, "bpe_encode_docs": 9.2,
-    "bpe_merges_docs": 7.6, "data_class_weights": 0.5,
-    "data_corpus_card": 0.7, "data_hash_split": 0.3,
-    "data_leakage_safe_split": 0.3, "data_mix_interleave": 0.6,
-    "data_pack_sequences": 0.9, "data_pps_sample": 0.8,
-    "data_quality_rank": 1.3, "data_shuffle_decorrelation": 2.2, "data_stratified_sample": 1.0,
-    "data_token_clip": 0.4, "dedup_blocking_stats": 0.7,
-    "dedup_prefix_collisions": 1.4,
-    "dedup_clusters_docs": 10.8, "dedup_embedding_cosine": 12.5,
-    "dedup_eval_docs": 7.9, "dedup_exact_docs": 0.3,
-    "dedup_minhash_docs": 2.2, "dedup_ngram_jaccard_docs": 4.8,
-    "dedup_rate_report": 0.8, "dedup_simhash_docs": 1.4,
-    "dedup_substring_spans": 3.0, "kg_2hop_confidence": 1.2,
-    "kg_alias_candidates_docs": 0.4, "kg_assortativity_docs": 1.8,
-    "kg_betweenness_docs": 2.0, "kg_centrality_docs": 0.9,
-    "kg_chunk_links_docs": 2.1, "kg_communities_docs": 1.7,
-    "kg_components_docs": 2.1, "kg_condensation_layers_docs": 1.7,
-    "kg_cooccur_docs": 0.1, "kg_degree_distribution_docs": 0.4,
-    "kg_degree_docs": 1.1, "kg_degree_histogram_docs": 0.5,
-    "kg_densest_subgraph_docs": 2.3, "kg_fuzzy_term_match": 0.8,
-    "kg_golden_records_docs": 0.6, "kg_graph_stats_docs": 13.3,
-    "kg_graph_summary_docs": 1.3, "kg_hits_docs": 8.0,
-    "kg_kcore_docs": 3.4, "kg_khop_docs": 1.7, "kg_ktruss_docs": 1.7,
-    "kg_link_prediction_docs": 1.2, "kg_link_scores_docs": 1.8,
-    "kg_max_spanning_forest_docs": 5.2, "kg_mentions_docs": 0.6,
-    "kg_metapath_counts_docs": 2.4, "kg_mis_docs": 2.6,
-    "kg_modularity_docs": 4.6, "kg_negative_samples": 0.9,
-    "kg_neighbor_jaccard_docs": 1.3, "kg_node2vec_probs_docs": 2.6,
-    "kg_pagerank_docs": 0.5, "kg_pagerank_weighted_docs": 0.5,
-    "kg_pipeline_edges": 2.3, "kg_pipeline_edges_exact": 2.4,
-    "kg_pipeline_nodes": 28.5, "kg_pipeline_nodes_exact": 16.6,
-    "kg_ppr_docs": 1.2, "kg_pred_cardinality_docs": 0.5,
-    "kg_random_walks_docs": 1.8, "kg_rich_club_docs": 6.5,
-    "kg_scc_docs": 2.8, "kg_semantic_chunks": 5.6, "kg_simrank_docs": 4.6,
-    "kg_sssp_docs": 2.1, "kg_stress_centrality_docs": 3.0,
-    "kg_substantive_filter": 0.2, "kg_triangles_docs": 7.3,
-    "kg_typed_edges_docs": 0.1, "multimodal_bmp_features": 1.9,
-    "multimodal_gif_features": 1.8, "multimodal_image_features": 2.6,
-    "multimodal_jpeg_features": 1.4, "multimodal_mp4_metadata": 0.9,
-    "multimodal_png_features": 4.4, "multimodal_tiff_features": 1.2,
-    "multimodal_wav_features": 1.0, "multimodal_webp_metadata": 0.9,
-    "multimodal_pdf_metadata": 0.9, "multimodal_pdf_text": 0.9,
-    "multimodal_pdf_fallback": 0.9, "multimodal_doc_ingest": 0.9,
-    "multimodal_pdf_pages": 0.9,
-    "kg_bridges_docs": 1.4, "kg_articulation_points_docs": 1.5,
-    "kg_2ecc_docs": 2.9, "data_weighted_sample": 0.4,
-    "dedup_containment_docs": 4.7,
-    "q_events_entropy_rate": 1.5, "text_term_burstiness": 1.3,
-    "q_events_graph_churn": 1.5, "q_events_seasonal_anomaly": 1.2,
-    "q_events_bootstrap_ci": 0.8,
-    "q_events_chi_square": 1.5, "q_events_mann_whitney": 1.0,
-    "q_events_ks_test": 1.0, "q_events_spearman": 1.4,
-    "q_events_runs_test": 1.4, "q_events_attribution": 1.4,
-    "data_kfold_split": 0.8, "kg_transitivity_docs": 3.5,
-    "q_events_cross_correlation": 1.5, "text_keyword_chi2": 2.5,
-    "q_events_type_affinity": 1.4, "q_events_markov_stationary": 10.7,
-    "q_lineitem_weighted_median": 1.2,
-    "q_events_kruskal_wallis": 1.6, "q_events_dp_noise": 0.8,
-    "data_filter_funnel": 1.2, "q_events_markov2": 1.3,
-    "q_orders_duplicate_detection": 0.8,
-    "search_prf_expansion": 2.8, "q_events_conversion_latency": 1.6,
-    "q_events_jackknife_se": 1.0, "q_events_column_profile": 1.2,
-    "q_events_feature_snapshot": 1.6, "data_padding_waste": 1.3,
-    "text_token_entropy": 2.0, "q_events_powerlaw_fit": 1.5,
-    "q_supplier_risk_rank": 1.6,
-    "text_lang_confusion": 1.8, "q_events_forecast_backtest": 1.1,
-    "q_events_ts_cv_folds": 1.2, "q_parts_abc_classification": 1.1,
-    "q_events_power_analysis": 1.0,
-    "q_parts_copurchase_similarity": 9.8,
-    "q_orders_price_volume_decomposition": 1.3,
-    "ann_cosine_histogram": 1.1, "q_events_session_paths": 1.2,
-    "dedup_lsh_tuning_curve": 1.0, "q_nation_flow_matrix": 2.0,
-    "q_events_position_value": 1.4,
-    "q_orders_backlog_series": 1.3, "q_orders_fiscal_445": 1.3,
-    "q_events_srm_check": 1.2,
-    "multimodal_tar_members": 1.2, "multimodal_zip_entries": 1.2,
-    "multimodal_au_features": 1.0,
-    "kg_ontology_closure": 1.0, "kg_shacl_validation": 1.5,
-    "kg_provenance_rollup": 2.0,
-    "kg_incremental_edges": 2.5, "multimodal_flac_streaminfo": 1.0,
-    "multimodal_mp3_frames": 0.8,
-    "q_events_page_hinkley": 1.2, "q_events_grubbs": 0.8,
-    "q_events_kz_filter": 0.8,
-    "search_ql_dirichlet": 1.5, "q_events_token_bucket": 1.5,
-    "kg_rpq_paths": 1.5,
-    "kg_clique_percolation": 15.0, "multimodal_rast_features": 1.0,
-    "sketch_hll_union_events": 1.0,
-    "data_token_dropout_aug": 1.0, "multimodal_xbm_features": 1.2,
-    "q_orders_little_law": 4.0,
-    "kg_pred_functionality": 1.5, "q_orders_fd_profile": 2.0,
-    "dedup_blocking_quality": 4.0,
-    "kg_amie_rules": 6.0, "q_lineitem_price_indices": 1.5,
-    "text_burrows_delta": 1.5,
-    "data_pack_ffd": 3.0, "multimodal_pam_features": 1.2,
-    "kg_wl_kernel_snapshots": 20.0, "kg_snapshot_diff": 1.5,
-    "multimodal_sgi_features": 1.0, "q_events_lz76_complexity": 1.0,
-    "q_events_kalman_1d": 0.8, "q_events_circadian_concentration": 0.8,
-    "q_orders_reorder_point": 1.2,
-    "kg_core_periphery": 5.0, "text_kneser_ney_bigram": 1.0,
-    "q_events_hurst_rs": 1.2, "multimodal_ilbm_features": 1.2,
-    "q_events_acf_bartlett": 1.2, "q_events_max_drawdown": 0.8,
-    "q_orders_mm1_queue": 0.8,
-    "kg_ego_effective_size": 4.0, "q_events_gumbel_fit": 1.0,
-    "q_events_pacf": 1.5, "kg_triangle_significance": 2.5,
-    "q_orders_croston": 2.0, "sketch_linear_counting": 1.0,
-    "kg_katz_index": 8.0, "q_orders_eoq": 1.0,
-    "multimodal_adpcm_features": 1.2,
-    "q_events_bass_diffusion": 1.0, "q_events_burstiness_param": 1.0,
-    "q_events_gesd_outliers": 6.0, "kg_moran_i": 4.0,
-    "q_events_ewma_chart": 1.5, "kg_motif_census_4": 3.0,
-    "kg_attack_robustness": 10.0,
-    "kg_ntriples_export_docs": 1.0, "kg_soundex_blocking": 1.0,
-    "kg_transe_eval_docs": 3.0, "kg_transe_sgd_step": 15.0,
-    "data_dsir_weights": 2.0, "kg_bcubed_eval": 3.0,
-    "kg_squares_docs": 3.5, "q_events_bot_flags": 1.6,
-    "data_shard_manifest": 0.7,
-    "q_events_growth_accounting": 1.7,
-    "q_events_attribution_windows": 2.7, "kg_reachability_docs": 5.3,
-    "q_events_session_stats": 1.9, "q_events_pchart": 2.5,
-    "search_kwic_snippets": 1.7,
-    "q_events_cuped_lift": 1.7, "q_events_qte": 1.7,
-    "data_curriculum_phases": 1.2, "q_orders_seasonal_decomposition": 2.1,
-    "q_events_debounce": 0.9,
-    "q_events_holt_forecast": 1.5, "text_rake_keywords": 3.9,
-    "q_events_retention_halflife": 1.5,
-    "q_events_survival": 0.8, "q_orders_cohort_ltv": 0.7,
-    "q10_returned_items": 1.5,
-    "q11_value_concentration": 1.8, "q12_shipmode_priority": 0.8,
-    "q13_customer_distribution": 2.3, "q14_promo_revenue": 1.5,
-    "q15_top_supplier": 1.6, "q16_supplier_variety": 1.1,
-    "q17_small_quantity_revenue": 2.4, "q18_large_volume_orders": 1.3,
-    "q19_disjunctive_revenue": 1.9, "q1_pricing_summary": 0.4,
-    "q20_dominant_shippers": 2.1, "q21_sole_blockers": 1.6,
-    "q22_global_sales_opportunity": 1.7, "q2_min_cost_supplier": 1.8,
-    "q3_shipping_priority": 0.8, "q4_late_ship_priority": 0.6,
-    "q6_forecast_revenue": 0.4, "q7_volume_shipping": 1.5,
-    "q8_market_share": 1.3, "q9_product_profit": 1.0,
-    "q_brand_cross_sell": 2.3,
-    "q_customer_balance_spend_trend": 1.6,
-    "q_customers_no_orders_antijoin": 0.3, "q_embeddings_norm_stats": 0.4,
-    "q_events_activity_streaks": 0.7, "q_events_asof_bucketed": 0.9,
-    "q_events_asof_join": 0.7, "q_events_assoc_rules": 3.9,
-    "q_events_abtest_lift": 1.4, "q_events_audience_overlap": 1.0,
-    "q_events_autocorr": 2.1, "q_events_behavior_gini": 0.4,
-    "q_events_dow_seasonality": 1.0, "q_events_k_anonymity": 0.8,
-    "q_events_lifecycle_segments": 1.2, "q_events_new_vs_returning": 1.5,
-    "q_events_peak_concurrency": 3.0, "q_events_stickiness": 1.3,
-    "q_events_variance_decomposition": 1.2, "q_events_weekly_growth": 0.7,
-    "q_supplier_part_breadth": 1.3,
-    "q_events_benford": 0.6, "q_events_bursts": 0.7,
-    "q_events_calendar_fill": 0.5,
-    "q_events_changepoint": 0.6, "q_events_cohort_retention": 2.7,
-    "q_events_cube": 0.4, "q_events_cumulative_users": 0.6,
-    "q_events_dq_audit": 0.6, "q_events_dwell_gaps": 0.6,
-    "q_events_ewma": 0.6, "q_events_frequent_sequences": 0.8,
-    "q_events_funnel": 0.8, "q_events_funnel_users": 0.6,
-    "q_events_grouping_sets": 0.4, "q_events_histogram": 0.3,
-    "q_events_hourly_profile": 0.4, "q_events_interval_overlap": 0.9,
-    "q_events_json_extract": 0.4, "q_events_latest_by_user": 0.5,
-    "q_events_latest_k": 0.5, "q_events_mad_outliers": 0.6,
-    "q_events_map_roundtrip": 0.5, "q_events_markov": 0.7,
-    "q_events_markov_transitions": 0.9, "q_events_moving_avg": 0.3,
-    "q_events_ols_trend": 0.7,
-    "q_events_pareto_users": 1.0, "q_events_percentile_disc": 0.6,
-    "q_events_pivot_daily": 0.5, "q_events_pivot_wide": 0.5,
-    "q_events_quantile_norm": 1.4, "q_events_quantiles": 0.3,
-    "q_events_range_join": 0.4, "q_events_recency_weights": 0.5,
-    "q_events_reconcile": 0.9,
-    "q_events_retention": 0.7, "q_events_rfm": 0.5,
-    "q_events_rolling_median": 0.6, "q_events_running_window": 0.4,
-    "q_events_scd2": 1.9, "q_events_sessionize": 0.3,
-    "q_events_simpson_diversity": 0.5, "q_events_snapshot_cdc": 0.8,
-    "q_events_time_weighted_avg": 0.5,
-    "q_events_transition_reciprocity": 1.1,
-    "q_events_unpivot_daily": 0.4, "q_events_value_ecdf": 0.4,
-    "q_events_value_histogram": 0.3, "q_events_value_quartiles": 0.4,
-    "q_events_wau": 0.9, "q_events_window_distinct": 0.4,
-    "q_events_winsorize": 0.4, "q_events_zorder_key": 0.7,
-    "q_events_zscore_outliers": 0.6, "q_local_supplier_volume": 1.7,
-    "q_nation_top_customers_agg": 0.4, "q_null_aware_not_in": 0.6,
-    "q_lineitem_ship_lag": 0.9,
-    "q_events_pareto_deciles": 1.3, "q_lineitem_discount_band": 1.1,
-    "q_order_fanout_profile": 11.3, "q_revenue_gini_lorenz": 2.0,
-    "text_oov_rate": 2.4,
-    "q_order_priority_semijoin": 0.4, "q_orders_hhi": 0.7,
-    "q_orders_interarrival": 1.1, "q_orders_priority_drift": 1.0,
-    "q_orders_revenue_growth": 0.7, "q_orders_yoy_quarter": 2.6,
-    "q_part_price_size_trend": 1.1,
-    "q_orders_monthly_revenue": 0.4, "q_revenue_by_nation": 0.9,
-    "q_rollup_orders": 0.3, "q_segment_distinct_agg": 0.3,
-    "q_setops_repeat_customers": 0.6, "q_skew_report": 0.5,
-    "q_sql_api_monthly_returns": 0.5, "q_top_events_per_user_ties": 0.3,
-    "q_top_parts": 0.5, "search_bm25": 1.3, "search_hybrid_rrf": 2.2,
-    "search_index_postings": 0.7, "search_phrase": 0.5,
-    "sketch_bloom_prune": 0.9, "sketch_cms_terms": 1.3,
-    "sketch_distinct_events": 1.3, "sketch_jaccard_events": 1.3,
-    "sketch_kmv_quantiles": 0.4, "text_bigram_lm": 0.9,
-    "text_collocations": 0.9, "text_contamination": 3.6,
-    "text_corpus_stats": 0.7, "text_doc_lm_score": 0.9,
-    "text_domain_budget": 1.0, "text_heldout_lm_score": 1.2,
-    "text_alpha_profile": 6.2,
-    "text_lang_quality": 1.0, "text_length_percentiles": 0.3,
-    "text_lexical_diversity": 0.6, "text_novelty": 1.6,
-    "text_pii_redact": 0.5, "text_pretokenize": 7.4,
-    "text_repeated_ngrams": 2.4, "text_repetition_stats": 1.8,
-    "text_hapax_ratio": 0.8, "text_readability": 1.5,
-    "text_sentence_profile": 1.6, "text_zipf_profile": 3.5,
-    "text_source_similarity": 1.5, "text_source_tv_matrix": 3.3,
-    "text_temperature_weights": 0.9,
-    "text_textrank_keywords": 1.3, "text_tokens_fingerprint": 0.4,
-    "text_unigram_drift": 1.6, "text_heaps_law_fit": 7.0,
-    "q_events_dobrushin_mixing": 8.0, "multimodal_gzip_members": 2.0,
-    "q_events_dtw_alignment": 3.6, "q_orders_wagner_whitin": 1.3,
-    "kg_bowtie_docs": 9.0, "ann_dbscan_clusters": 9.0,
-    "q_events_sax_symbols": 1.5, "q_events_adf_test": 1.5,
-    "multimodal_mime_parts": 1.5, "text_wordpiece_encode": 4.0,
-    "q_events_synthetic_control": 1.5, "q_parts_knapsack": 2.0,
-    "kg_distance_distribution": 6.0, "multimodal_sqlite_tables": 1.5,
-    "sketch_theta_diff_events": 2.0, "dedup_lcs_diff": 2.5,
-    "q_events_transfer_entropy": 2.0, "text_distinct_substrings": 2.5,
-    "q_events_uplift_qini": 1.0, "kg_min_cut_docs": 2.5,
-    "q_parts_lpt_makespan": 1.5, "q_events_rqa_determinism": 1.5,
-    "q_events_optimal_segmentation": 1.5, "data_greedy_coverage": 3.0,
-    "q_events_interval_scheduling": 1.5, "kg_molloy_reed": 1.0,
-    "dedup_cdc_chunks": 3.0, "multimodal_pnm_ascii_features": 1.5,
-    "kg_vertex_cover_docs": 2.0, "kg_ltm_cascade_docs": 1.5,
-    "kg_dominating_set_docs": 3.0, "q_events_topsis_ranking": 1.2,
-    "text_huffman_lengths": 3.0, "ann_kcenter_gonzalez": 4.0,
-    "text_vocab_coverage": 0.7, "text_vocab_growth": 0.5,
-    "tfidf_similar_docs": 1.4,
-    # session-14 additions (measured in one warm sweep at the gate scale)
-    "text_myers_diff": 5.9, "q_shard_placement_ring": 3.1,
-    "q_events_merkle_diff": 1.7, "search_elias_fano_postings": 1.2,
-    "sketch_gk_quantiles": 0.6, "sketch_misra_gries_merge": 1.9,
-    "q_events_delta_binpacked": 2.0, "data_weighted_reservoir": 0.8,
-    "q_events_fenwick_tree": 2.3, "q_events_cache_replacement": 0.6,
-    "search_roaring_layout": 0.8, "sketch_dgim_window": 3.6,
-    "q_events_rle_hybrid": 3.1, "sketch_cuckoo_filter": 3.5,
-    "q_events_kway_merge_plan": 2.4, "q_events_zonemap_pruning": 2.2,
-    "q_events_lsm_compaction": 1.0, "q_docs_robin_hood_probing": 6.5,
-    "q_docs_bptree_bulkload": 3.7, "data_hamming_secded": 1.5,
-    "data_rs_erasure": 0.7, "q_shard_bounded_loads": 1.1,
-    "data_length_batching": 5.0, "q_join_order_selinger": 4.0,
-    "q_events_ta_topk": 6.0, "text_fm_index_search": 2.4,
-    "text_wavelet_tree_rank": 1.0, "q_docs_learned_index": 4.0,
-    "q_events_apriori_itemsets": 3.2, "search_golomb_gaps": 3.0,
-    "q_docs_treap_shape": 0.9,
-}
-
-# Walls measured by the session-13 full sweep (624/624, warm
-# session at the gate scale) for queries registered since the
-# last calibration — refines the fast-first gate ordering.
-_GATE_WALL_S.update({
-    "ann_hnsw_search": 0.7, "ann_jl_projection": 0.6,
-    "ann_kdtree_partition": 0.9, "ann_knee_cutoff": 0.7,
-    "ann_knn_loocv": 1.5, "ann_scalar_quantization": 0.6,
-    "ann_tsp_heldkarp": 0.5, "data_chat_render_mask": 0.7,
-    "data_crawl_schedule": 0.5, "data_html_extract": 0.3,
-    "data_preference_pairs": 0.6, "data_robots_decisions": 0.6,
-    "data_span_corruption": 0.9, "data_url_canonicalize": 0.5,
-    "kg_bipartite_check": 3.9, "kg_conductance_docs": 2.2,
-    "kg_critical_path_docs": 0.8, "kg_degeneracy_docs": 0.4,
-    "kg_effective_resistance_docs": 1.9, "kg_eulerian_docs": 1.4,
-    "kg_greedy_coloring_docs": 0.4, "kg_louvain_docs": 3.4,
-    "kg_salsa_docs": 3.5, "kg_spanning_trees_docs": 2.0,
-    "kg_voterank_docs": 2.2, "kg_wl_refinement_docs": 2.0,
-    "multimodal_avi_riff": 0.7, "multimodal_avro_blocks": 0.5,
-    "multimodal_bencode_torrents": 0.5,
-    "multimodal_bmp_rle_features": 0.5,
-    "multimodal_bplist_records": 0.5, "multimodal_cbor_records": 0.5,
-    "multimodal_csv_rfc4180": 0.4,
-    "multimodal_der_certificates": 0.4,
-    "multimodal_dns_messages": 0.5, "multimodal_ebml_header": 0.5,
-    "multimodal_goertzel_features": 0.5, "multimodal_ics_rrule": 0.5,
-    "multimodal_lz4_blocks": 0.4, "multimodal_midi_features": 0.4,
-    "multimodal_msgpack_records": 0.4, "multimodal_ogg_pages": 0.8,
-    "multimodal_orc_footer": 0.5, "multimodal_parquet_footer": 0.5,
-    "multimodal_pcap_packets": 0.4, "multimodal_pcx_features": 0.5,
-    "multimodal_protobuf_records": 0.5,
-    "multimodal_sfnt_tables": 0.5,
-    "multimodal_shapefile_records": 0.5,
-    "multimodal_sitemap_urls": 0.5,
-    "multimodal_utf8_validation": 0.5,
-    "multimodal_warc_records": 0.5, "multimodal_xpm_features": 0.5,
-    "multimodal_xz_container": 0.6, "q_customers_luhn_check": 0.3,
-    "q_docs_fleiss_kappa": 0.2, "q_docs_mcc": 0.3,
-    "q_events_absorbing_chain": 0.8, "q_events_assignment_lap": 0.8,
-    "q_events_bandit_replay": 0.4, "q_events_banzhaf_power": 0.4,
-    "q_events_bh_fdr": 0.6, "q_events_bradley_terry": 0.4,
-    "q_events_brown_forsythe": 0.7,
-    "q_events_capture_recapture": 0.5, "q_events_chao1": 0.2,
-    "q_events_chow_test": 0.7, "q_events_cliff_delta": 0.4,
-    "q_events_cochran_armitage": 0.3, "q_events_cochran_q": 0.3,
-    "q_events_competing_risks": 1.0, "q_events_condorcet_vote": 1.3,
-    "q_events_convex_hull": 0.7, "q_events_cramer_von_mises": 0.4,
-    "q_events_cramers_v": 0.5, "q_events_did": 0.4,
-    "q_events_dispersion": 0.3, "q_events_durbin_watson": 0.5,
-    "q_events_elo_ratings": 0.4, "q_events_emd_hourly": 0.6,
-    "q_events_energy_distance": 0.6, "q_events_engle_granger": 0.9,
-    "q_events_erlang_c": 0.5, "q_events_fisher_exact": 0.5,
-    "q_events_friedman": 0.4, "q_events_g_test": 1.1,
-    "q_events_granger": 0.4, "q_events_haar_wavelet": 0.7,
-    "q_events_hmm_forward": 0.5, "q_events_hodges_lehmann": 0.4,
-    "q_events_jonckheere": 0.8, "q_events_kaplan_meier": 0.7,
-    "q_events_kendall_w": 0.5, "q_events_kuiper_test": 0.4,
-    "q_events_lindley_queue": 0.4, "q_events_lis": 0.4,
-    "q_events_ljung_box": 0.6, "q_events_lof": 1.0,
-    "q_events_mantel_haenszel": 0.4, "q_events_matrix_profile": 1.1,
-    "q_events_max_subarray": 0.6, "q_events_mean_excess": 0.6,
-    "q_events_mood_median": 0.8, "q_events_ndcg": 0.6,
-    "q_events_nelson_aalen": 0.6, "q_events_page_trend": 0.9,
-    "q_events_perceptron": 0.4, "q_events_permutation_entropy": 0.7,
-    "q_events_pettitt_test": 0.8, "q_events_piecewise_trend": 0.4,
-    "q_events_pr_auc": 0.6, "q_events_ransac_line": 0.5,
-    "q_events_reliability_ece": 0.5, "q_events_sample_entropy": 0.9,
-    "q_events_secretary_rule": 1.0, "q_events_sign_test": 0.6,
-    "q_events_sinkhorn_scaling": 0.6, "q_events_sprt": 0.3,
-    "q_events_turning_points": 0.3, "q_events_viterbi": 0.5,
-    "q_events_wasserstein": 0.4, "q_lineitem_ols2": 0.4,
-    "q_lineitem_weibull": 0.5, "q_nation_rca": 0.6,
-    "q_orders_newsvendor": 1.0, "q_parts_abc_xyz": 0.6,
-    "q_parts_fellegi_sunter": 0.4, "q_parts_johnson_rule": 0.6,
-    "q_parts_skyline": 0.2, "q_stable_matching_gs": 0.5,
-    "q_users_geohash": 0.4, "q_users_hilbert_curve": 0.8,
-    "search_rbo_rankings": 0.5, "sketch_ams_f2": 0.5,
-    "sketch_countsketch_terms": 1.1,
-    "sketch_hdr_latency_quantiles": 1.6, "text_aho_corasick": 0.8,
-    "text_base85_codec": 0.5, "text_bwt_inverse": 0.4,
-    "text_bwt_runs": 0.3, "text_good_turing": 0.3,
-    "text_needleman_wunsch": 0.4, "text_punycode_decode": 0.3,
-    "text_s_stemmer": 0.4, "text_smith_waterman": 0.4
-})
-
-
-# The five queries sharing the two expensive pipeline memos (the ~25 s
-# 200-conversation pipeline build and its reference-exact sibling). They run
-_EFFRES_SQL = """
-WITH RECURSIVE m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {lex}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 330
-), bd AS (SELECT a AS x, b AS y FROM e UNION SELECT b, a FROM e),
-nodes AS (SELECT DISTINCT x AS term FROM bd),
-comp AS (
-  SELECT DISTINCT term FROM nodes
-  WHERE term IN (
-    WITH RECURSIVE rc(v) AS (
-      SELECT min(term) FROM nodes
-      UNION
-      SELECT bd.y FROM rc JOIN bd ON bd.x = rc.v)
-    SELECT v FROM rc)
-), ty AS (
-  SELECT term, CAST(row_number() OVER (ORDER BY term) AS INTEGER) AS ti
-  FROM comp
-), nn AS (
-  SELECT x.ti AS i, y.ti AS j,
-         CAST(CASE WHEN EXISTS (SELECT 1 FROM e
-                WHERE (e.a = x.term AND e.b = y.term)
-                   OR (e.a = y.term AND e.b = x.term))
-              THEN 1 ELSE 0 END AS HUGEINT) AS adj
-  FROM ty x, ty y
-), deg AS (
-  SELECT i, sum(adj) AS d FROM nn GROUP BY i
-), lapfull AS (
-  SELECT (SELECT list(l ORDER BY i) FROM (
-    SELECT n2.i, list(CASE WHEN n2.i = n2.j THEN dg.d
-                           ELSE -n2.adj END ORDER BY n2.j) AS l
-    FROM nn n2 JOIN deg dg ON dg.i = n2.i
-    GROUP BY n2.i) q) AS L,
-    (SELECT CAST(count(*) AS INTEGER) FROM ty) AS n
-), ce AS (
-  SELECT e.a, e.b, ta.ti AS ui, tb.ti AS vi,
-         CAST(row_number() OVER (ORDER BY e.a, e.b) AS INTEGER) AS eid
-  FROM e JOIN ty ta ON ta.term = e.a JOIN ty tb ON tb.term = e.b
-), kl AS (
-  SELECT ce.eid, list(t.ti ORDER BY t.ti) AS ks
-  FROM ce JOIN ty t ON t.ti <> ce.ui AND t.ti <> ce.vi
-  GROUP BY ce.eid
-), init AS (
-  -- eid 0 carries the denominator (Laplacian minus the last node:
-  -- #spanning trees); eid >= 1 carries one numerator per edge
-  -- (Laplacian minus BOTH endpoints: #spanning 2-forests separating
-  -- them, = #spanning trees that contain the edge)
-  SELECT 0 AS eid, list_transform(range(1, lf.n), i ->
-           list_transform(range(1, lf.n), j -> lf.L[i][j])) AS mat,
-         CAST(lf.n - 1 AS INTEGER) AS msz
-  FROM lapfull lf
-  UNION ALL
-  SELECT kl.eid,
-         list_transform(kl.ks, i ->
-           list_transform(kl.ks, j -> lf.L[i][j])),
-         CAST(len(kl.ks) AS INTEGER)
-  FROM kl, lapfull lf
-), st AS (
-  SELECT eid, 0 AS k, mat, msz FROM init
-  UNION ALL
-  SELECT s.eid, s.k + 1,
-         list_transform(range(1, s.msz + 1), i ->
-           list_transform(range(1, s.msz + 1), j ->
-             CASE WHEN i > s.k + 1 AND j > s.k + 1
-             THEN (s.mat[s.k + 1][s.k + 1] * s.mat[i][j]
-                   - s.mat[i][s.k + 1] * s.mat[s.k + 1][j])
-                  // (CASE WHEN s.k = 0 THEN 1
-                      ELSE s.mat[s.k][s.k] END)
-             ELSE s.mat[i][j] END)),
-         s.msz
-  FROM st s WHERE s.k < s.msz - 1
-), fin AS (
-  SELECT eid, mat[msz][msz] AS det
-  FROM st
-  QUALIFY row_number() OVER (PARTITION BY eid ORDER BY k DESC) = 1
-), tt AS (SELECT det AS t FROM fin WHERE eid = 0),
-fs AS (
-  SELECT sum(coalesce(f.det, 1)) AS sf
-  FROM ce LEFT JOIN fin f ON f.eid = ce.eid
-)
-SELECT ce.a AS term_a, ce.b AS term_b,
-       CAST(coalesce(f.det, 1) AS VARCHAR) AS trees_through_edge,
-       CAST(tt.t AS VARCHAR) AS n_spanning_trees,
-       CAST(coalesce(f.det, 1) * 1000000 // tt.t AS BIGINT)
-           AS resistance_e6,
-       (SELECT sf FROM fs)
-           = ((SELECT n FROM lapfull) - 1) * tt.t AS foster_ok
-FROM ce LEFT JOIN fin f ON f.eid = ce.eid, tt
-""".format(lex=kg_docs.lexicon_values_sql())
-
-
-@register("kg_effective_resistance_docs", _EFFRES_SQL)
-def kg_effective_resistance_docs(spark, sf_dir):
-    """EXACT effective resistance across every edge of the sparsified
-    co-occurrence graph's main component, as a ratio of two Kirchhoff
-    determinants: R(u,v) = det(L minus rows/cols {u,v}) / det(L minus
-    one row/col) — the numerator counts spanning 2-forests separating
-    u from v, which by the matrix-tree theorem equals the number of
-    spanning trees CONTAINING edge (u,v), so the same row doubles as
-    exact spanning-tree edge centrality. Both determinants run through
-    the fraction-free Bareiss elimination the kg_spanning_trees_docs
-    query pinned (every entry an exact integer minor, every division
-    exact). Foster's theorem — the sum of edge resistances of a
-    connected graph is EXACTLY n-1 — is verified in integer form
-    (sum of numerators == (n-1)·T) and PINNED TRUE on every row, so a
-    single wrong minor anywhere flips the result. Engine: bounded
-    driver Bareiss per edge over the vocabulary projection (the graph
-    is lexicon-bounded, documented at kg_spanning_trees_docs); oracle:
-    the identical eliminations as ONE nested-list recursion keyed by
-    edge id, the denominator riding as edge 0."""
-    from .operators.canonicalize import connected_components
-    edges = (_cooc_edges(spark, sf_dir, 330)
-             .select(F.col("term_a").alias("src"),
-                     F.col("term_b").alias("dst")))
-    comp = (connected_components(edges, driver_threshold=0)
-            .select(F.col("norm_term").alias("node"),
-                    F.col("canon").alias("component")))
-    root = comp.agg(F.min("node").alias("r")).collect()[0]["r"]
-    rc = (comp.filter(F.col("node") == root)
-          .select("component").collect()[0][0])
-    main = {r["node"] for r in
-            comp.filter(F.col("component") == F.lit(rc)).collect()}
-    erows = sorted((r["src"], r["dst"]) for r in edges.collect()
-                   if r["src"] in main and r["dst"] in main)
-    nodes = sorted(main)
-    ti = {t: i for i, t in enumerate(nodes)}
-    n = len(nodes)
-    lap = [[0] * n for _ in range(n)]
-    for a, b in erows:
-        lap[ti[a]][ti[a]] += 1
-        lap[ti[b]][ti[b]] += 1
-        lap[ti[a]][ti[b]] -= 1
-        lap[ti[b]][ti[a]] -= 1
-
-    def _det(keep):
-        m = [[lap[i][j] for j in keep] for i in keep]
-        sz = len(m)
-        if sz == 0:
-            return 1
-        for k in range(sz - 1):
-            piv = m[k - 1][k - 1] if k > 0 else 1
-            for i2 in range(k + 1, sz):
-                for j2 in range(k + 1, sz):
-                    m[i2][j2] = (m[k][k] * m[i2][j2]
-                                 - m[i2][k] * m[k][j2]) // piv
-        return m[sz - 1][sz - 1]
-
-    t_count = _det(list(range(n - 1)))
-    dets = [(a, b, _det([i for i in range(n)
-                         if i not in (ti[a], ti[b])]))
-            for a, b in erows]
-    foster = sum(fv for _, _, fv in dets) == (n - 1) * t_count
-    out = [(a, b, str(fv), str(t_count), fv * 1000000 // t_count,
-            foster) for a, b, fv in dets]
-    return spark.createDataFrame(
-        out, "term_a string, term_b string, trees_through_edge string,"
-             " n_spanning_trees string, resistance_e6 long,"
-             " foster_ok boolean")
-
-
-_FISHER_SQL = """
-WITH RECURSIVE ev AS (
-  SELECT CAST(user_id % 2 AS BIGINT) AS grp,
-         CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS succ
-  FROM (SELECT * FROM events ORDER BY ts, event_id LIMIT 40)
-), tab AS (
-  SELECT
-    CAST(sum(CASE WHEN grp = 0 AND succ = 1 THEN 1 ELSE 0 END)
-         AS BIGINT) AS a,
-    CAST(sum(CASE WHEN grp = 0 AND succ = 0 THEN 1 ELSE 0 END)
-         AS BIGINT) AS b,
-    CAST(sum(CASE WHEN grp = 1 AND succ = 1 THEN 1 ELSE 0 END)
-         AS BIGINT) AS c,
-    CAST(sum(CASE WHEN grp = 1 AND succ = 0 THEN 1 ELSE 0 END)
-         AS BIGINT) AS d
-  FROM ev
-), dims AS (
-  SELECT a, b, c, d, a + b AS r1, c + d AS r2, a + c AS c1,
-         a + b + c + d AS n
-  FROM tab
-), binom AS (
-  SELECT nn, CAST(0 AS BIGINT) AS j, CAST(1 AS HUGEINT) AS cc
-  FROM (SELECT r1 AS nn FROM dims UNION SELECT r2 FROM dims
-        UNION SELECT n FROM dims)
-  UNION ALL
-  SELECT nn, j + 1, cc * (nn - j) // (j + 1)
-  FROM binom WHERE j < nn
-), xs AS (
-  SELECT CAST(unnest(range(greatest(0, c1 - r2),
-                           least(r1, c1) + 1)) AS BIGINT) AS x
-  FROM dims
-), terms AS (
-  SELECT xs.x,
-         (SELECT cc FROM binom, dims
-          WHERE binom.nn = dims.r1 AND binom.j = xs.x)
-         * (SELECT cc FROM binom, dims
-            WHERE binom.nn = dims.r2 AND binom.j = dims.c1 - xs.x)
-             AS nx
-  FROM xs
-), obs AS (SELECT nx AS na FROM terms, dims WHERE terms.x = dims.a),
-tot AS (
-  SELECT cc AS denom FROM binom, dims
-  WHERE binom.nn = dims.n AND binom.j = dims.c1
-)
-SELECT dims.a, dims.b, dims.c, dims.d,
-  CAST(CASE WHEN dims.b * dims.c = 0 THEN NULL
-       ELSE dims.a * dims.d * 1000000 // (dims.b * dims.c) END
-       AS BIGINT) AS odds_ratio_e6,
-  CAST((SELECT sum(nx) FROM terms WHERE nx <= (SELECT na FROM obs))
-       * 1000000000 // (SELECT denom FROM tot) AS BIGINT) AS p_two_e9,
-  CAST((SELECT sum(t2.nx) FROM terms t2, dims d2 WHERE t2.x <= d2.a)
-       * 1000000000 // (SELECT denom FROM tot) AS BIGINT) AS p_less_e9,
-  CAST((SELECT sum(t2.nx) FROM terms t2, dims d2 WHERE t2.x >= d2.a)
-       * 1000000000 // (SELECT denom FROM tot) AS BIGINT)
-      AS p_greater_e9,
-  (SELECT sum(nx) FROM terms) = (SELECT denom FROM tot)
-      AS vandermonde_ok
-FROM dims
-"""
-
-
-@register("q_events_fisher_exact", _FISHER_SQL)
-def q_events_fisher_exact(spark, sf_dir):
-    """Fisher's EXACT test on the 2x2 table (user-id parity arm x
-    purchase conversion) of the first 40 events under stable
-    (ts, event_id) order — the small-sample independence test the
-    chi-square row approximates, computed the way Fisher meant it:
-    hypergeometric tail probabilities as exact big-integer rationals.
-    Binomial coefficients come from the multiplicative Pascal
-    recurrence the sign test pinned (exact at every step), the
-    two-sided p sums all tables whose exact pmf numerator is <= the
-    observed one (well-defined here because the comparison is between
-    INTEGERS — no float-tolerance convention needed), and the
-    Vandermonde identity (sum of all pmf numerators == C(n, c1)) is
-    verified and PINNED TRUE in the result, so a single wrong
-    coefficient anywhere flips the row. One-sided tails and the
-    e6-floored odds ratio ride along. Engine: 4-cell aggregate +
-    driver-side math.comb exact integers; oracle: the identical
-    rationals via the Pascal recurrence."""
-    import math
-    ev = (_t(spark, sf_dir, "events").orderBy("ts", "event_id")
-          .limit(40)
-          .select((F.col("user_id") % 2).alias("grp"),
-                  (F.col("event_type") == "purchase").cast("int")
-                  .alias("succ")))
-    cnt = {(r["grp"], r["succ"]): r["cnt"] for r in
-           ev.groupBy("grp", "succ").agg(F.count("*").alias("cnt"))
-           .collect()}
-    a = cnt.get((0, 1), 0)
-    b = cnt.get((0, 0), 0)
-    c = cnt.get((1, 1), 0)
-    d = cnt.get((1, 0), 0)
-    r1, r2, c1, ntot = a + b, c + d, a + c, a + b + c + d
-    terms = {x: math.comb(r1, x) * math.comb(r2, c1 - x)
-             for x in range(max(0, c1 - r2), min(r1, c1) + 1)}
-    na = terms[a]
-    denom = math.comb(ntot, c1)
-    p_two = sum(v for v in terms.values() if v <= na) \
-        * 1000000000 // denom
-    p_less = sum(v for x, v in terms.items() if x <= a) \
-        * 1000000000 // denom
-    p_greater = sum(v for x, v in terms.items() if x >= a) \
-        * 1000000000 // denom
-    orat = a * d * 1000000 // (b * c) if b * c else None
-    vok = sum(terms.values()) == denom
-    return spark.createDataFrame(
-        [(a, b, c, d, orat, p_two, p_less, p_greater, vok)],
-        "a long, b long, c long, d long, odds_ratio_e6 long,"
-        " p_two_e9 long, p_less_e9 long, p_greater_e9 long,"
-        " vandermonde_ok boolean")
-
-
-_NELSON_AALEN_SQL = """
-WITH e AS (
-  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events
-), g AS (
-  SELECT user_id, us,
-         CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us) IS NULL
-                   OR us - lag(us) OVER (PARTITION BY user_id ORDER BY us)
-                      > 1800000000
-              THEN 1 ELSE 0 END AS brk
-  FROM e
-), s AS (
-  SELECT user_id, us,
-         sum(brk) OVER (PARTITION BY user_id ORDER BY us) AS sid
-  FROM g
-), sess AS (
-  SELECT user_id, sid, min(us) AS t0, max(us) AS t1 FROM s GROUP BY 1, 2
-), b AS (SELECT max(us) AS mx FROM e),
-dur AS (
-  SELECT (t1 - t0) // 60000000 AS t,
-         (t1 > (SELECT mx FROM b) - 1800000000) AS censored
-  FROM sess
-), ev AS (
-  SELECT t, CAST(count(*) AS HUGEINT) AS a,
-         CAST(count(*) FILTER (WHERE NOT censored) AS HUGEINT) AS d
-  FROM dur GROUP BY t
-), risk AS (
-  SELECT t, d, sum(a) OVER (ORDER BY t DESC) AS n FROM ev
-), terms AS (
-  SELECT t, d, n,
-         d * 1000000000 // n AS h_e9,
-         d * 1000000000000 // (n * n) AS v_e12
-  FROM risk WHERE d > 0
-)
-SELECT CAST(t AS BIGINT) AS t_minutes, CAST(n AS BIGINT) AS n_risk,
-       CAST(d AS BIGINT) AS n_deaths,
-       CAST(h_e9 AS BIGINT) AS hazard_step_e9,
-       CAST(sum(h_e9) OVER (ORDER BY t) AS BIGINT) AS cum_hazard_e9,
-       CAST(sum(v_e12) OVER (ORDER BY t) AS BIGINT) AS cum_var_e12
-FROM terms
-"""
-
-
-@register("q_events_nelson_aalen", _NELSON_AALEN_SQL)
-def q_events_nelson_aalen(spark, sf_dir):
-    """Nelson-Aalen cumulative-hazard estimator over the SAME censored
-    session durations the Kaplan-Meier row walks (30-min sessionize,
-    right-censoring within 30 min of corpus end): H(t) = sum of d_i/n_i
-    over death times up to t, plus the textbook variance accumulator
-    sum of d_i/n_i^2. Where KM needed one float ln per step, the
-    hazard path needs NO floats at all — each increment is an exact
-    integer ratio floored once to e9 (variance to e12), then
-    integer-summed by the ordered window, so the two survival
-    estimators bracket each other with the hazard side exact. Plan:
-    identical to KM — one user-partitioned sessionize window, collapse
-    to distinct duration-minutes, at-risk and cumulative windows over
-    O(calendar) rows."""
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("us"))
-    w = Window.partitionBy("user_id").orderBy("us")
-    gap = F.col("us") - F.lag("us").over(w)
-    s = (e.withColumn("brk", F.when(F.lag("us").over(w).isNull()
-                                    | (gap > 1_800_000_000), 1).otherwise(0))
-         .withColumn("sid", F.sum("brk").over(w)))
-    sess = (s.groupBy("user_id", "sid")
-            .agg(F.min("us").alias("t0"), F.max("us").alias("t1")))
-    b = e.agg(F.max("us").alias("mx"))
-    dur = (sess.crossJoin(F.broadcast(b))
-           .select(F.expr("(t1 - t0) div 60000000").alias("t"),
-                   (F.col("t1") > F.col("mx") - 1_800_000_000)
-                   .alias("censored")))
-    ev = dur.groupBy("t").agg(
-        F.count(F.lit(1)).cast("long").alias("a"),
-        F.sum(F.when(~F.col("censored"), 1).otherwise(0)).cast("long")
-        .alias("d"))
-    risk = ev.select(
-        "t", "d",
-        F.sum("a").over(Window.orderBy(F.col("t").desc())).alias("n"))
-    terms = (risk.filter(F.col("d") > 0)
-             .select("t", "d", "n",
-                     F.expr("d * 1000000000 div n").alias("h_e9"),
-                     F.expr("d * 1000000000000 div (n * n)")
-                     .alias("v_e12")))
-    return terms.select(
-        F.col("t").cast("long").alias("t_minutes"),
-        F.col("n").cast("long").alias("n_risk"),
-        F.col("d").cast("long").alias("n_deaths"),
-        F.col("h_e9").cast("long").alias("hazard_step_e9"),
-        F.sum("h_e9").over(Window.orderBy("t")).cast("long")
-        .alias("cum_hazard_e9"),
-        F.sum("v_e12").over(Window.orderBy("t")).cast("long")
-        .alias("cum_var_e12"))
-
-
-_BH_FDR_SQL = """
-WITH RECURSIVE d AS (
-  SELECT event_type AS et, CAST(ts AS DATE) AS day,
-         CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1, 2
-), s AS (
-  SELECT et,
-         CASE WHEN x > lag(x) OVER (PARTITION BY et ORDER BY day) THEN 1
-              WHEN x < lag(x) OVER (PARTITION BY et ORDER BY day) THEN -1
-              ELSE 0 END AS sg
-  FROM d
-), agg AS (
-  SELECT et,
-         CAST(sum(CASE WHEN sg = 1 THEN 1 ELSE 0 END) AS BIGINT) AS kp,
-         CAST(sum(CASE WHEN sg = -1 THEN 1 ELSE 0 END) AS BIGINT) AS kn
-  FROM s WHERE sg IS NOT NULL AND sg <> 0 GROUP BY et
-), binom AS (
-  SELECT et, CAST(0 AS BIGINT) AS j, CAST(1 AS HUGEINT) AS c,
-         kp + kn AS n
-  FROM agg
-  UNION ALL
-  SELECT et, j + 1, c * (n - j) // (j + 1), n
-  FROM binom WHERE j < n
-), pv AS (
-  SELECT agg.et, agg.kp + agg.kn AS n_moves, agg.kp,
-    CAST(least(1000000000, 2 * least(
-        (SELECT sum(c) FROM binom b WHERE b.et = agg.et
-         AND b.j >= agg.kp) * 1000000000
-          // (SELECT sum(c) FROM binom b WHERE b.et = agg.et),
-        (SELECT sum(c) FROM binom b WHERE b.et = agg.et
-         AND b.j <= agg.kp) * 1000000000
-          // (SELECT sum(c) FROM binom b WHERE b.et = agg.et)))
-      AS BIGINT) AS p_two_e9
-  FROM agg
-), ranked AS (
-  SELECT *,
-         CAST(row_number() OVER (ORDER BY p_two_e9, et) AS BIGINT) AS rk,
-         CAST((SELECT count(*) FROM pv) AS BIGINT) AS m
-  FROM pv
-), thresh AS (
-  SELECT coalesce(max(rk), 0) AS kstar FROM ranked
-  WHERE p_two_e9 * m <= rk * 50000000
-)
-SELECT et AS event_type, n_moves, kp AS k_pos, p_two_e9,
-       rk AS p_rank, CAST(rk * 50000000 // m AS BIGINT) AS bh_cutoff_e9,
-       rk <= (SELECT kstar FROM thresh) AS bh_reject,
-       CAST((SELECT kstar FROM thresh) AS BIGINT) AS k_star
-FROM ranked
-"""
-
-
-@register("q_events_bh_fdr", _BH_FDR_SQL)
-def q_events_bh_fdr(spark, sf_dir):
-    """Benjamini-Hochberg false-discovery-rate control at alpha = 0.05
-    over a real family of hypotheses: one exact two-sided sign test per
-    event type (day-over-day movement of its daily volume — the
-    per-type sibling of q_events_sign_test, same Pascal-recurrence
-    big-integer tails, same e9 floor-then-double convention). The BH
-    step-up rule runs entirely in integers: p-values sorted with a
-    deterministic (p, type) tiebreak, the largest rank k with
-    p_(k)·m <= k·(alpha·1e9) found by cross-multiplication — no float
-    division anywhere — and every row carries its rank, its BH cutoff,
-    the family-wide k* and the reject verdict, so the whole multiple-
-    testing decision is auditable from the result alone. Engine:
-    per-type movement windows + driver-side exact tails over the
-    5-member family; oracle: the identical recurrence keyed by type."""
-    import math
-    e = _t(spark, sf_dir, "events").select(
-        "event_type", F.col("ts").cast("date").alias("day"))
-    daily = e.groupBy("event_type", "day").agg(F.count("*").alias("x"))
-    w = Window.partitionBy("event_type").orderBy("day")
-    mv = daily.select(
-        "event_type",
-        F.when(F.col("x") > F.lag("x").over(w), 1)
-        .when(F.col("x") < F.lag("x").over(w), -1).otherwise(0)
-        .alias("sg"))
-    agg = (mv.filter(F.col("sg") != 0)
-           .groupBy("event_type")
-           .agg(F.sum(F.when(F.col("sg") == 1, 1).otherwise(0))
-                .alias("kp"),
-                F.sum(F.when(F.col("sg") == -1, 1).otherwise(0))
-                .alias("kn"))
-           .collect())
-    fam = []
-    for r in agg:
-        kp, n = int(r["kp"]), int(r["kp"]) + int(r["kn"])
-        denom = sum(math.comb(n, j) for j in range(n + 1))
-        ge = sum(math.comb(n, j) for j in range(kp, n + 1)) \
-            * 1000000000 // denom
-        le = sum(math.comb(n, j) for j in range(kp + 1)) \
-            * 1000000000 // denom
-        fam.append((r["event_type"], n, kp,
-                    min(1000000000, 2 * min(ge, le))))
-    fam.sort(key=lambda t: (t[3], t[0]))
-    m = len(fam)
-    kstar = max((i + 1 for i, t in enumerate(fam)
-                 if t[3] * m <= (i + 1) * 50000000), default=0)
-    out = [(et, n, kp, p, i + 1, (i + 1) * 50000000 // m,
-            (i + 1) <= kstar, kstar)
-           for i, (et, n, kp, p) in enumerate(fam)]
-    return spark.createDataFrame(
-        out, "event_type string, n_moves long, k_pos long,"
-             " p_two_e9 long, p_rank long, bh_cutoff_e9 long,"
-             " bh_reject boolean, k_star long")
-
-
-_NW_SQL = """
-WITH RECURSIVE ds AS (
-  SELECT doc_id,
-         regexp_replace(lower(substr(text, 1, 120)), '[^a-z ]', '', 'g')
-             AS s
-  FROM documents ORDER BY doc_id LIMIT 2
-), ab AS (
-  SELECT (SELECT s FROM ds ORDER BY doc_id LIMIT 1) AS a,
-         (SELECT s FROM ds ORDER BY doc_id DESC LIMIT 1) AS b
-), dims AS (
-  SELECT a, b, CAST(length(a) AS INTEGER) AS m,
-         CAST(length(b) AS INTEGER) AS n
-  FROM ab
-), st AS (
-  SELECT 1 AS d,
-         list_transform(range(1, dims.m + 1),
-                        i -> CAST(NULL AS BIGINT)) AS hd,
-         list_transform(range(1, dims.m + 1),
-                        i -> CAST(NULL AS BIGINT)) AS hm1,
-         dims.a AS a, dims.b AS b, dims.m AS m, dims.n AS n
-  FROM dims
-  UNION ALL
-  SELECT s.d + 1,
-         list_transform(range(1, s.m + 1), i -> CASE
-           WHEN s.d + 1 - i >= 1 AND s.d + 1 - i <= s.n
-           THEN greatest(
-             (CASE WHEN i >= 2 AND s.d + 1 - i >= 2
-                   THEN s.hm1[i - 1]
-                   WHEN i = 1 THEN CAST(-2 * (s.d - i) AS BIGINT)
-                   ELSE CAST(-2 * (i - 1) AS BIGINT) END)
-               + (CASE WHEN substr(s.a, CAST(i AS INTEGER), 1)
-                          = substr(s.b, CAST(s.d + 1 - i AS INTEGER), 1)
-                  THEN 2 ELSE -1 END),
-             (CASE WHEN i >= 2 THEN s.hd[i - 1]
-                   ELSE CAST(-2 * (s.d + 1 - i) AS BIGINT) END) - 2,
-             (CASE WHEN s.d + 1 - i >= 2 THEN s.hd[i]
-                   ELSE CAST(-2 * i AS BIGINT) END) - 2)
-           ELSE CAST(NULL AS BIGINT) END) AS hd2,
-         s.hd AS hm12, s.a, s.b, s.m, s.n
-  FROM st s WHERE s.d < s.m + s.n
-), score AS (
-  SELECT hd[m] AS sc FROM st WHERE d = m + n
-)
-SELECT CAST(s.d AS INTEGER) AS diagonal,
-       CAST(list_aggregate(s.hd, 'max') AS BIGINT) AS wave_max,
-       CAST(s.m AS INTEGER) AS len_a, CAST(s.n AS INTEGER) AS len_b,
-       CAST((SELECT sc FROM score) AS BIGINT) AS nw_score
-FROM st s WHERE s.d >= 2
-"""
-
-
-@register("text_needleman_wunsch", _NW_SQL)
-def text_needleman_wunsch(spark, sf_dir):
-    """Needleman-Wunsch GLOBAL alignment between the same two pinned
-    120-char document prefixes the Smith-Waterman row aligns locally
-    (match +2 / mismatch -1 / gap -2) — the end-to-end cousin: no
-    zero-clamp, affine boundary rows H[0][j] = -2j / H[i][0] = -2i
-    folded into the recurrence's edge cases instead of a stored
-    border. Same anti-diagonal wavefront as Smith-Waterman (two
-    carried diagonals, no intra-step dependence), with out-of-range
-    cells as NULLs so each wavefront's max comes from one
-    null-skipping list aggregate — the whole wavefront-max trajectory
-    is emitted (a wrong cell anywhere shifts some diagonal's max) with
-    the exact global score H[m][n] beside it. All integer arithmetic;
-    the global score is by construction <= the Smith-Waterman local
-    score on the same pair. Engine: bounded driver DP over the two
-    pinned prefixes; oracle: the identical wavefront as a two-diagonal
-    list recursion."""
-    import re as _re
-    docs = (_t(spark, sf_dir, "documents").orderBy("doc_id").limit(2)
-            .select("text").collect())
-    a = _re.sub(r"[^a-z ]", "", docs[0]["text"][:120].lower())
-    b = _re.sub(r"[^a-z ]", "", docs[1]["text"][:120].lower())
-    m, n = len(a), len(b)
-    H = [[0] * (n + 1) for _ in range(m + 1)]
-    for i in range(m + 1):
-        H[i][0] = -2 * i
-    for j in range(n + 1):
-        H[0][j] = -2 * j
-    for i in range(1, m + 1):
-        for j in range(1, n + 1):
-            sub = 2 if a[i - 1] == b[j - 1] else -1
-            H[i][j] = max(H[i - 1][j - 1] + sub,
-                          H[i - 1][j] - 2, H[i][j - 1] - 2)
-    score = H[m][n]
-    out = []
-    for d in range(2, m + n + 1):
-        vals = [H[i][d - i] for i in range(1, m + 1)
-                if 1 <= d - i <= n]
-        out.append((d, max(vals) if vals else None, m, n, score))
-    return spark.createDataFrame(
-        out, "diagonal int, wave_max long, len_a int, len_b int,"
-             " nw_score long")
-
-
-_RBO_SQL = """
-WITH RECURSIVE u AS (
-  SELECT user_id,
-         CAST(count(*) FILTER (WHERE event_type = 'click')
-              AS BIGINT) AS clicks,
-         CAST(count(*) FILTER (WHERE event_type = 'purchase')
-              AS BIGINT) AS buys
-  FROM events GROUP BY user_id
-), ra AS (
-  SELECT user_id, CAST(row_number()
-      OVER (ORDER BY clicks DESC, user_id) AS BIGINT) AS r
-  FROM u
-), rb AS (
-  SELECT user_id, CAST(row_number()
-      OVER (ORDER BY buys DESC, user_id) AS BIGINT) AS r
-  FROM u
-), kk AS (SELECT least(20, CAST(count(*) AS BIGINT)) AS k FROM u),
-jo AS (
-  SELECT greatest(ra.r, rb.r) AS entry
-  FROM ra JOIN rb ON ra.user_id = rb.user_id, kk
-  WHERE ra.r <= kk.k AND rb.r <= kk.k
-), pw AS (
-  SELECT CAST(1 AS BIGINT) AS d, CAST(1 AS HUGEINT) AS p9,
-         CAST('10000000000000000000' AS HUGEINT) AS p10
-  UNION ALL
-  SELECT d + 1, p9 * 9, p10 // 10 FROM pw WHERE d < 20
-), ov AS (
-  SELECT pw.d, pw.p9, pw.p10,
-         CAST((SELECT count(*) FROM jo WHERE jo.entry <= pw.d)
-              AS HUGEINT) AS o
-  FROM pw, kk WHERE pw.d <= kk.k
-), terms AS (
-  SELECT d, o, p9 * o * p10 * (232792560 // d) AS t
-  FROM ov
-)
-SELECT CAST(t2.d AS BIGINT) AS depth, CAST(t2.o AS BIGINT) AS overlap,
-       CAST(t2.o * 1000000 // t2.d AS BIGINT) AS agreement_e6,
-       CAST(sum(t2.t) OVER (ORDER BY t2.d) * 1000000000
-            // (CAST('100000000000000000000' AS HUGEINT) * 232792560)
-            AS BIGINT) AS rbo_partial_e9
-FROM terms t2
-"""
-
-
-@register("search_rbo_rankings", _RBO_SQL)
-def search_rbo_rankings(spark, sf_dir):
-    """Rank-biased overlap (Webber-Moffat-Zobel 2010, p = 0.9) between
-    two top-20 rankings of the SAME user population — by click volume
-    and by purchase volume (deterministic (count desc, user_id)
-    tiebreaks) — the top-weighted ranking-similarity measure used to
-    compare retrieval runs, computed as EXACT rationals: p^(d-1)/10 =
-    9^(d-1)/10^d, every prefix-overlap term put over the common
-    denominator 10^20 * lcm(1..20), so the e9-floored RBO prefix sums
-    carry no float anywhere (geometric weights via one carried-power
-    recursion, overlap-at-depth via each user's greatest(rank_a,
-    rank_b) entry depth — no per-depth set intersection). The full
-    depth trajectory is emitted: overlap count, e6 agreement ratio,
-    cumulative RBO. Engine: two row_number windows + driver-side exact
-    big-integer fold over <=20 depths; oracle: identical rationals
-    with HUGEINT powers."""
-    u = (_t(spark, sf_dir, "events").groupBy("user_id")
-         .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).alias("clicks"),
-              F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).alias("buys")))
-    ra = u.select(
-        "user_id",
-        F.row_number().over(
-            Window.orderBy(F.col("clicks").desc(), "user_id"))
-        .alias("r_a"))
-    rb = u.select(
-        "user_id",
-        F.row_number().over(
-            Window.orderBy(F.col("buys").desc(), "user_id"))
-        .alias("r_b"))
-    pairs = [(int(r["r_a"]), int(r["r_b"])) for r in
-             ra.join(rb, "user_id").collect()]
-    k = min(20, len(pairs))
-    entries = sorted(max(a, b) for a, b in pairs
-                     if a <= k and b <= k)
-    lcm = 232792560
-    denom = 10 ** 20 * lcm
-    out, cum = [], 0
-    for d in range(1, k + 1):
-        o = sum(1 for e in entries if e <= d)
-        cum += 9 ** (d - 1) * o * 10 ** (20 - d) * (lcm // d)
-        out.append((d, o, o * 1000000 // d,
-                    cum * 1000000000 // denom))
-    return spark.createDataFrame(
-        out, "depth long, overlap long, agreement_e6 long,"
-             " rbo_partial_e9 long")
-
-
-_HDRHIST_SQL = """
-WITH e AS (
-  SELECT user_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us FROM events
-), gaps AS (
-  SELECT us - lag(us) OVER (PARTITION BY user_id ORDER BY us) AS v
-  FROM e
-  QUALIFY v IS NOT NULL
-), idx AS (
-  SELECT v, greatest(length(bin(v)) - 6, 0) AS b,
-         greatest(length(bin(v)) - 6, 0) * 32
-           + (v >> greatest(length(bin(v)) - 6, 0)) AS i
-  FROM gaps
-), hist AS (
-  SELECT i, CAST(count(*) AS BIGINT) AS c FROM idx GROUP BY i
-), tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM gaps),
-cum AS (
-  SELECT i, c, sum(c) OVER (ORDER BY i) AS cm FROM hist
-), probes AS (
-  SELECT CAST(unnest([50, 90, 99]) AS BIGINT) AS pct
-), tgt AS (
-  SELECT pct, (tot.n * pct + 99) // 100 AS r, tot.n FROM probes, tot
-), pick AS (
-  SELECT t.pct, t.r, t.n,
-         (SELECT min(i) FROM cum WHERE cm >= t.r) AS si
-  FROM tgt t
-), est AS (
-  SELECT pct, r, n, si,
-         CASE WHEN si < 64 THEN si
-              ELSE (si % 32 + 32) << (si // 32 - 1) END AS lb,
-         CASE WHEN si < 64 THEN si
-              ELSE ((si % 32 + 32) << (si // 32 - 1))
-                   + ((((si % 32 + 33) << (si // 32 - 1)) - 1
-                       - ((si % 32 + 32) << (si // 32 - 1))) // 2)
-              END AS mid
-  FROM pick
-), ex AS (
-  SELECT e2.pct, e2.r, e2.n, e2.si, e2.lb, e2.mid,
-         (SELECT v FROM (SELECT v, row_number() OVER (ORDER BY v) AS rn
-                         FROM idx) q WHERE q.rn = e2.r) AS exact_v
-  FROM est e2
-)
-SELECT pct, n, r AS target_rank, CAST(si AS BIGINT) AS sketch_index,
-       CAST(lb AS BIGINT) AS bucket_lb_us,
-       CAST(mid AS BIGINT) AS sketch_mid_us,
-       CAST(exact_v AS BIGINT) AS exact_us,
-       CAST(abs(mid - exact_v) AS BIGINT) AS abs_err_us,
-       CAST(abs(mid - exact_v) * 1000000 // exact_v AS BIGINT)
-           AS rel_err_e6,
-       abs(mid - exact_v) * 1000000 // exact_v <= 15625
-           AS within_bound
-FROM ex
-"""
-
-
-@register("sketch_hdr_latency_quantiles", _HDRHIST_SQL)
-def sketch_hdr_latency_quantiles(spark, sf_dir):
-    """HdrHistogram-style log-linear quantile sketch over per-user
-    inter-event gaps (the production latency-histogram layout: 6
-    significant bits, bucket index b*32 + (v >> b) with b =
-    max(bitlen(v)-6, 0) — EXACT integer bit arithmetic via length of
-    the binary rendering, no logs, so both engines bucket identically
-    at every boundary), probed at p50/p90/p99 with ceil-rank targets
-    and AUDITED against the exact rank-order quantile of the raw gaps:
-    each row carries the sketch's bucket-midpoint estimate, the exact
-    value, the e6 relative error, and the a-priori guarantee
-    rel_err <= 1/64 (15625e-6) PINNED TRUE — the measured proof that
-    the fixed-size sketch answers quantile queries within its design
-    bound while only ever shuffling O(buckets) rows. Plan: one
-    user-partitioned lag window, map-side bucket math, one O(buckets)
-    aggregate; the exact audit quantile is the only O(n log n)
-    component and exists solely as the in-result oracle."""
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", F.unix_micros(F.col("ts").cast("timestamp")).alias("us"))
-    w = Window.partitionBy("user_id").orderBy("us")
-    gaps = (e.select((F.col("us") - F.lag("us").over(w)).alias("v"))
-            .filter(F.col("v").isNotNull()))
-    idx = gaps.select(
-        "v",
-        F.expr("greatest(length(bin(v)) - 6, 0) * 32"
-               " + shiftright(v, greatest(length(bin(v)) - 6, 0))")
-        .alias("i"))
-    hist = idx.groupBy("i").agg(F.count("*").cast("long").alias("c"))
-    n = gaps.count()
-    cum = hist.select(
-        "i", "c", F.sum("c").over(Window.orderBy("i")).alias("cm"))
-    ranked = idx.select(
-        "v", F.row_number().over(Window.orderBy("v")).alias("rn"))
-    out = []
-    for pct in (50, 90, 99):
-        r = (n * pct + 99) // 100
-        si = int(cum.filter(F.col("cm") >= r)
-                 .agg(F.min("i")).collect()[0][0])
-        if si < 64:
-            lb = mid = si
-        else:
-            b = si // 32 - 1
-            s = si % 32 + 32
-            lb = s << b
-            ub = ((s + 1) << b) - 1
-            mid = lb + (ub - lb) // 2
-        exact = int(ranked.filter(F.col("rn") == r)
-                    .collect()[0]["v"])
-        rel = abs(mid - exact) * 1000000 // exact
-        out.append((pct, n, r, si, lb, mid, exact,
-                    abs(mid - exact), rel, rel <= 15625))
-    return spark.createDataFrame(
-        out, "pct long, n long, target_rank long, sketch_index long,"
-             " bucket_lb_us long, sketch_mid_us long, exact_us long,"
-             " abs_err_us long, rel_err_e6 long, within_bound boolean")
-
-
-_ERLANGC_SQL = """
-WITH RECURSIVE base AS (
-  SELECT CAST(count(*) AS BIGINT) AS n,
-         (max(epoch_us(CAST(ts AS TIMESTAMP)))
-          - min(epoch_us(CAST(ts AS TIMESTAMP)))) // 1000000 AS t
-  FROM events
-), a AS (SELECT n, t, n * 60000 // t AS a_e2 FROM base),
-inv AS (
-  SELECT CAST(0 AS BIGINT) AS k, CAST(1000000000 AS HUGEINT) AS i
-  UNION ALL
-  SELECT k + 1,
-         least(1000000000 + ((k + 1) * 100 * i)
-                 // (SELECT a_e2 FROM a),
-               CAST('1000000000000000000' AS HUGEINT))
-  FROM inv WHERE k < 40
-), m AS (
-  SELECT inv.k AS c, a.a_e2,
-         a.a_e2 * 10000000 // inv.k AS rho_e9,
-         CAST(CAST('1000000000000000000' AS HUGEINT) // inv.i
-              AS BIGINT) AS b_e9
-  FROM inv, a WHERE inv.k >= 1
-)
-SELECT c, a_e2 AS offered_load_e2,
-       CAST(rho_e9 // 1000 AS BIGINT) AS rho_e6,
-       a_e2 < 100 * c AS stable,
-       b_e9 AS erlang_b_e9,
-       CASE WHEN a_e2 < 100 * c THEN
-         b_e9 * 1000000000
-           // (1000000000 - rho_e9 + rho_e9 * b_e9 // 1000000000)
-       END AS p_wait_e9,
-       CASE WHEN a_e2 < 100 * c THEN
-         (b_e9 * 1000000000
-            // (1000000000 - rho_e9 + rho_e9 * b_e9 // 1000000000))
-         * 60000000 // ((100 * c - a_e2) * 1000000000)
-       END AS wq_sec_e3
-FROM m
-"""
-
-
-@register("q_events_erlang_c", _ERLANGC_SQL)
-def q_events_erlang_c(spark, sf_dir):
-    """Erlang-C M/M/c staffing sweep from the corpus's REAL arrival
-    rate (lambda = events per observed second, mean service time fixed
-    at 600 s): offered load A = lambda/mu floored once to e2, then the
-    classic inverse-Erlang-B recursion 1/B(k) = 1 + (k/A)/B(k-1) run
-    in e9 fixed point with identical floors in both engines (clamped
-    at 1e18 where blocking underflows e9 — the deterministic
-    saturation both sides share), Erlang C via C = B/(1 - rho(1-B))
-    and the Wq = C/(c·mu - lambda) waiting time, for every fleet size
-    c = 1..40 with the stability frontier A < c flagged per row —
-    the M/M/c generalization of the analytic M/M/1 row and the
-    steady-state complement of the Lindley sample-path replay. Zero
-    in-engine floats: one aggregate feeds a 40-step scalar recursion.
-    Engine: driver fold; oracle: identical recursion."""
-    r = (_t(spark, sf_dir, "events")
-         .agg(F.count("*").alias("n"),
-              (F.max(F.unix_micros(F.col("ts").cast("timestamp")))
-               - F.min(F.unix_micros(F.col("ts").cast("timestamp"))))
-              .alias("t_us")).collect()[0])
-    n, t = int(r["n"]), int(r["t_us"]) // 1000000
-    a_e2 = n * 60000 // t
-    cap = 10 ** 18
-    inv = [10 ** 9]
-    for k in range(1, 41):
-        inv.append(min(10 ** 9 + k * 100 * inv[-1] // a_e2, cap))
-    out = []
-    for c in range(1, 41):
-        rho_e9 = a_e2 * 10000000 // c
-        b_e9 = cap // inv[c]
-        stable = a_e2 < 100 * c
-        if stable:
-            den = 10 ** 9 - rho_e9 + rho_e9 * b_e9 // 10 ** 9
-            pw = b_e9 * 10 ** 9 // den
-            wq = pw * 60000000 // ((100 * c - a_e2) * 10 ** 9)
-        else:
-            pw = wq = None
-        out.append((c, a_e2, rho_e9 // 1000, stable, b_e9, pw, wq))
-    return spark.createDataFrame(
-        out, "c long, offered_load_e2 long, rho_e6 long,"
-             " stable boolean, erlang_b_e9 long, p_wait_e9 long,"
-             " wq_sec_e3 long")
-
-
-def _ogg_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the Ogg walk: re-derived from the pure ogg_file_spec
-    / paginate_stream formulas — a wrong lacing split, a missed
-    continued flag, a zlib-flavored CRC or a dropped -1 granule
-    sentinel flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.oggfile import (
-        ogg_file_spec, packet_bytes, paginate_stream,
-    )
-    rows = []
-    for i in range(n):
-        spec = ogg_file_spec(i, seed)
-        pages = [(s, pg) for s, st in enumerate(spec)
-                 for pg in paginate_stream(st["sizes"])]
-        joined = b"|".join(
-            b"|".join(packet_bytes(i, s, p, sz)
-                      for p, sz in enumerate(st["sizes"]))
-            for s, st in sorted(enumerate(spec),
-                                key=lambda t: t[1]["serial"]))
-        rows.append(
-            f"({i}, {len(pages)}, {len(spec)},"
-            f" {sum(len(st['sizes']) for st in spec)},"
-            f" {1 if i % 4 == 3 else 0},"
-            f" {sum(1 for _, pg in pages if pg['continued'])},"
-            f" {sum(1 for _, pg in pages if pg['granule'] == -1)},"
-            f" {sum(sum(pg['lacing']) for _, pg in pages)},"
-            f" '{_h.md5(joined).hexdigest()}')")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id,"
-        " CAST(n_pages AS INTEGER) AS n_pages,"
-        " CAST(n_streams AS INTEGER) AS n_streams,"
-        " CAST(n_packets AS INTEGER) AS n_packets,"
-        " CAST(n_bad_crc AS INTEGER) AS n_bad_crc,"
-        " CAST(n_continued_pages AS INTEGER) AS n_continued_pages,"
-        " CAST(n_nogranule_pages AS INTEGER) AS n_nogranule_pages,"
-        " CAST(total_payload_bytes AS BIGINT) AS total_payload_bytes,"
-        " packets_md5"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, n_pages, n_streams, n_packets, n_bad_crc,"
-        " n_continued_pages, n_nogranule_pages, total_payload_bytes,"
-        " packets_md5)")
-
-
-@register("multimodal_ogg_pages", _ogg_fixture_sql())
-def multimodal_ogg_pages(spark, sf_dir):
-    """Ogg container manifest via the HAND-ROLLED page walk
-    (sources/oggfile.ogg_manifest, RFC 3533): "OggS" capture pattern,
-    the lacing-value segment table (255 = continue, <255 = packet end
-    — a 510-byte packet is [255, 255, 0]), packets reassembled across
-    pages through the 0x01 continued flag with the flag VERIFIED
-    against carry state, grouped multiplexing of concurrent logical
-    bitstreams de-interleaved by serial with per-stream sequence-gap
-    detection, the -1 granule sentinel on pages where no packet
-    completes, and the format's own forward CRC-32 (poly 0x04C11DB7,
-    init 0, no reflection — zlib's crc32 fails every page) verified
-    per page with every 4th file deliberately corrupted so the
-    failure path is pinned. Version != 0 and truncations honestly
-    refused. One mapInPandas over the binary column, fully
-    distributed."""
-    from .sources.oggfile import ogg_manifest, synthetic_oggs
-    return ogg_manifest(synthetic_oggs(spark, 30))
-
-
-def _avi_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the AVI walk: re-derived from the pure avi_file_spec
-    formulas — a pad-byte slip, a wrong idx1 offset convention or a
-    missed frame-count cross-check flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.rifffile import (
-        avi_file_spec, frame_bytes,
-    )
-    rows = []
-    for i in range(n):
-        sp = avi_file_spec(i, seed)
-        md5 = _h.md5(b"|".join(
-            frame_bytes(i, f, sz)
-            for f, sz in enumerate(sp["frames"]))).hexdigest()
-        odd = sum(1 for sz in sp["frames"] + sp["audio"] if sz % 2)
-        movi = sum(sp["frames"]) + sum(sp["audio"])
-        idx_ok = "TRUE" if sp["has_idx"] else "NULL"
-        rows.append(
-            f"({i}, {sp['width']}, {sp['height']},"
-            f" {1 + (1 if sp['audio'] else 0)}, {len(sp['frames'])},"
-            f" {len(sp['frames'])}, TRUE, {len(sp['audio'])}, {odd},"
-            f" {'TRUE' if sp['has_idx'] else 'FALSE'}, {idx_ok},"
-            f" {movi}, '{md5}')")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id,"
-        " CAST(width AS INTEGER) AS width,"
-        " CAST(height AS INTEGER) AS height,"
-        " CAST(n_streams AS INTEGER) AS n_streams,"
-        " CAST(total_frames AS INTEGER) AS total_frames,"
-        " CAST(n_frame_chunks AS INTEGER) AS n_frame_chunks,"
-        " CAST(frames_match AS BOOLEAN) AS frames_match,"
-        " CAST(n_audio_chunks AS INTEGER) AS n_audio_chunks,"
-        " CAST(n_odd_padded AS INTEGER) AS n_odd_padded,"
-        " CAST(has_idx1 AS BOOLEAN) AS has_idx1,"
-        " CAST(idx_ok AS BOOLEAN) AS idx_ok,"
-        " CAST(movi_bytes AS BIGINT) AS movi_bytes, frames_md5"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, width, height, n_streams, total_frames,"
-        " n_frame_chunks, frames_match, n_audio_chunks, n_odd_padded,"
-        " has_idx1, idx_ok, movi_bytes, frames_md5)")
-
-
-@register("multimodal_avi_riff", _avi_fixture_sql())
-def multimodal_avi_riff(spark, sf_dir):
-    """AVI/RIFF container manifest via the HAND-ROLLED tree walk
-    (sources/rifffile.avi_manifest): little-endian RIFF envelope, the
-    nested LIST descent (hdrl → avih + per-stream strl, movi holding
-    '00dc'/'01wb' chunks), the WORD-ALIGNMENT pad byte on odd-sized
-    chunks (skipping `size` instead of `size + size%2` desyncs on the
-    first odd frame — odd sizes are planted on purpose), the avih
-    total_frames field CROSS-CHECKED against the actual video-chunk
-    count, and idx1 index entries verified fourcc/offset/size against
-    the movi chunks they claim to address (offsets from the 'movi'
-    fourcc byte). Big-endian RIFX and non-AVI forms (WAVE) honestly
-    refused. The chunked-container sibling of the MP4 box walk; one
-    mapInPandas over the binary column, fully distributed."""
-    from .sources.rifffile import avi_manifest, synthetic_avis
-    return avi_manifest(synthetic_avis(spark, 30))
 
 
 _SPAN_CORRUPT_SQL = r"""
@@ -37034,2096 +7643,6 @@ def data_preference_pairs(spark, sf_dir):
                                     F.col("w.text")))
                      .alias("pair_md5")))
     return pairs.orderBy("user_id", "day").limit(300)
-
-
-_ASSIGN_SQL = """
-WITH uu AS (
-  SELECT user_id, ui FROM (
-    SELECT user_id, CAST(row_number() OVER (ORDER BY count(*) DESC,
-                                            user_id) AS INTEGER) AS ui
-    FROM events GROUP BY user_id) q WHERE ui <= 6
-), dd AS (
-  SELECT day, di FROM (
-    SELECT day, CAST(row_number() OVER (ORDER BY day) AS INTEGER)
-               AS di
-    FROM (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events) x) q
-  WHERE di <= 6
-), c AS (
-  SELECT uu.ui, dd.di, uu.user_id, dd.day,
-         CAST(coalesce(cnt.c, 0) AS BIGINT) AS c
-  FROM uu CROSS JOIN dd
-  LEFT JOIN (SELECT user_id, CAST(ts AS DATE) AS day,
-                    count(*) AS c
-             FROM events GROUP BY 1, 2) cnt
-    ON cnt.user_id = uu.user_id AND cnt.day = dd.day
-), perms AS (
-  SELECT p1.di AS a1, p2.di AS a2, p3.di AS a3, p4.di AS a4,
-         p5.di AS a5, p6.di AS a6
-  FROM dd p1, dd p2, dd p3, dd p4, dd p5, dd p6
-  WHERE p1.di <> p2.di AND p1.di <> p3.di AND p1.di <> p4.di
-    AND p1.di <> p5.di AND p1.di <> p6.di AND p2.di <> p3.di
-    AND p2.di <> p4.di AND p2.di <> p5.di AND p2.di <> p6.di
-    AND p3.di <> p4.di AND p3.di <> p5.di AND p3.di <> p6.di
-    AND p4.di <> p5.di AND p4.di <> p6.di AND p5.di <> p6.di
-), scored AS (
-  SELECT a1, a2, a3, a4, a5, a6,
-         (SELECT c FROM c WHERE ui = 1 AND di = a1)
-       + (SELECT c FROM c WHERE ui = 2 AND di = a2)
-       + (SELECT c FROM c WHERE ui = 3 AND di = a3)
-       + (SELECT c FROM c WHERE ui = 4 AND di = a4)
-       + (SELECT c FROM c WHERE ui = 5 AND di = a5)
-       + (SELECT c FROM c WHERE ui = 6 AND di = a6) AS total
-  FROM perms
-), best AS (
-  SELECT * FROM scored
-  ORDER BY total DESC, a1, a2, a3, a4, a5, a6 LIMIT 1
-)
-SELECT u.user_id, d.day, cc.c AS events_on_day,
-       b.total AS total_events,
-       (SELECT count(*) FROM scored s WHERE s.total > b.total) = 0
-           AS optimal_ok
-FROM best b, uu u
-JOIN dd d ON d.di = CASE u.ui WHEN 1 THEN b.a1 WHEN 2 THEN b.a2
-                    WHEN 3 THEN b.a3 WHEN 4 THEN b.a4
-                    WHEN 5 THEN b.a5 ELSE b.a6 END
-JOIN c cc ON cc.ui = u.ui AND cc.di = d.di
-"""
-
-
-@register("q_events_assignment_lap", _ASSIGN_SQL)
-def q_events_assignment_lap(spark, sf_dir):
-    """EXACT linear assignment (the Hungarian-algorithm problem solved
-    by exhaustion at auditable size): the top-6 users by volume
-    assigned one-to-one to the first 6 calendar days, maximizing total
-    covered events over all 720 permutations — the bipartite matching
-    optimum with the optimality certificate IN the result (count of
-    strictly better permutations == 0, PINNED TRUE on every row).
-    Deterministic (total desc, assignment-vector asc) tiebreak keeps
-    the winning permutation unique. The weighted complement of the
-    Gale-Shapley stable matching (stability vs total-welfare optima)
-    and of Johnson's two-machine schedule. Engine: 6x6 matrix
-    collected, exhaustive exact max on the driver; oracle: the
-    identical 720-row enumeration as a six-way distinct self-join."""
-    from itertools import permutations
-    e = _t(spark, sf_dir, "events")
-    users = [r["user_id"] for r in
-             (e.groupBy("user_id").agg(F.count("*").alias("c"))
-              .orderBy(F.col("c").desc(), "user_id").limit(6)
-              .collect())]
-    days = [r["day"] for r in
-            (e.select(F.to_date("ts").alias("day")).distinct()
-             .orderBy("day").limit(6).collect())]
-    cnt = {(r["user_id"], r["day"]): r["c"] for r in
-           (e.withColumn("day", F.to_date("ts"))
-            .groupBy("user_id", "day").agg(F.count("*").alias("c"))
-            .collect())}
-    mat = [[cnt.get((u, d), 0) for d in days] for u in users]
-    best = None
-    for p in permutations(range(6)):
-        total = sum(mat[u][p[u]] for u in range(6))
-        key = (-total,) + tuple(x + 1 for x in p)
-        if best is None or key < best[0]:
-            best = (key, p, total)
-    _, p, total = best
-    n_better = sum(1 for q in permutations(range(6))
-                   if sum(mat[u][q[u]] for u in range(6)) > total)
-    out = [(users[u], days[p[u]], mat[u][p[u]], total, n_better == 0)
-           for u in range(6)]
-    return spark.createDataFrame(
-        out, "user_id long, day date, events_on_day long,"
-             " total_events long, optimal_ok boolean")
-
-
-_CPM_SQL_TPL = """
-WITH RECURSIVE pos AS (
-  SELECT doc_id, term,
-         list_position(string_split(text, ' '), term) AS fp
-  FROM documents, {lex}
-  WHERE list_position(string_split(text, ' '), term) > 0
-),
-cnt AS (
-  SELECT a.term AS src, b.term AS dst, count(*) AS w
-  FROM pos a JOIN pos b ON a.doc_id = b.doc_id AND a.fp < b.fp
-  GROUP BY 1, 2
-),
-de AS (
-  SELECT c1.src, c1.dst
-  FROM cnt c1 JOIN cnt c2 ON c1.src = c2.dst AND c1.dst = c2.src
-  WHERE c1.w >= c2.w + 12
-),
-verts AS (SELECT DISTINCT src AS v FROM de
-          UNION SELECT DISTINCT dst FROM de),
-reach(a, b) AS (
-  SELECT v, v FROM verts
-  UNION
-  SELECT r.a, e.dst FROM reach r JOIN de e ON r.b = e.src
-),
-scc AS (
-  SELECT r1.a AS term, min(r1.b) AS scc_id
-  FROM reach r1
-  WHERE EXISTS (SELECT 1 FROM reach r2
-                WHERE r2.a = r1.b AND r2.b = r1.a)
-  GROUP BY r1.a
-),
-ce AS (
-  SELECT DISTINCT s1.scc_id AS src, s2.scc_id AS dst
-  FROM de JOIN scc s1 ON s1.term = de.src
-  JOIN scc s2 ON s2.term = de.dst
-  WHERE s1.scc_id <> s2.scc_id
-),
-durs AS (
-  SELECT scc_id, CAST(count(*) AS BIGINT) AS dur
-  FROM scc GROUP BY 1
-),
-fpaths(v, l) AS (
-  SELECT scc_id, dur FROM durs
-  UNION
-  SELECT ce.dst, fpaths.l + d.dur
-  FROM fpaths JOIN ce ON ce.src = fpaths.v
-  JOIN durs d ON d.scc_id = ce.dst
-),
-ef AS (SELECT v AS scc_id, max(l) AS ef FROM fpaths GROUP BY v),
-bpaths(v, l) AS (
-  SELECT scc_id, dur FROM durs
-  UNION
-  SELECT ce.src, bpaths.l + d.dur
-  FROM bpaths JOIN ce ON ce.dst = bpaths.v
-  JOIN durs d ON d.scc_id = ce.src
-),
-tl AS (SELECT v AS scc_id, max(l) AS tail FROM bpaths GROUP BY v),
-proj AS (SELECT max(ef) AS makespan FROM ef)
-SELECT d.scc_id, d.dur AS duration,
-       e.ef - d.dur AS es, e.ef AS ef,
-       p.makespan - t.tail AS ls,
-       p.makespan - t.tail + d.dur AS lf,
-       (p.makespan - t.tail) - (e.ef - d.dur) AS slack,
-       (p.makespan - t.tail) - (e.ef - d.dur) = 0 AS critical,
-       p.makespan
-FROM durs d JOIN ef e ON e.scc_id = d.scc_id
-JOIN tl t ON t.scc_id = d.scc_id, proj p
-"""
-
-
-@register("kg_critical_path_docs",
-          _CPM_SQL_TPL.format(lex=kg_docs.lexicon_values_sql()))
-def kg_critical_path_docs(spark, sf_dir):
-    """Critical-path method (CPM) over the mention-order graph's
-    condensation DAG with SCC sizes as activity durations: forward
-    pass (earliest start/finish = longest weighted incoming path),
-    backward pass (latest start/finish = makespan minus longest
-    weighted outgoing path), slack, and the critical flag — slack-0
-    super-nodes are exactly those on some maximum-duration chain, the
-    concept clusters that bound any staged traversal of the KG. The
-    scheduling extension of kg_condensation_layers_docs (which stops
-    at unweighted depth): both relaxations are DAG path enumerations,
-    so a wrong SCC contraction or a missed edge shifts some node's
-    slack and flips the hash. Engine: exact memoized DP over the
-    collected vocabulary-bounded condensation (the Viterbi
-    discipline); oracle: forward and backward recursive path
-    enumerations over first-principles SQL SCCs."""
-    import sys
-    from .operators.graph_algos import strongly_connected_components
-    de = _mention_order_edges(spark, sf_dir)
-    scc = strongly_connected_components(de, src="src", dst="dst")
-    rows = scc.collect()
-    comp = {r["node"]: r["scc_id"] for r in rows}
-    dur = {}
-    for r in rows:
-        dur[r["scc_id"]] = dur.get(r["scc_id"], 0) + 1
-    edges = {(comp[r["src"]], comp[r["dst"]])
-             for r in de.collect()
-             if comp[r["src"]] != comp[r["dst"]]}
-    succs, preds = {}, {}
-    for s, d in edges:
-        succs.setdefault(s, set()).add(d)
-        preds.setdefault(d, set()).add(s)
-    sys.setrecursionlimit(10000)
-    ef_memo, tail_memo = {}, {}
-
-    def ef(v):
-        if v not in ef_memo:
-            ef_memo[v] = dur[v] + max((ef(p) for p in
-                                       preds.get(v, ())), default=0)
-        return ef_memo[v]
-
-    def tail(v):
-        if v not in tail_memo:
-            tail_memo[v] = dur[v] + max((tail(s) for s in
-                                         succs.get(v, ())), default=0)
-        return tail_memo[v]
-
-    makespan = max(ef(v) for v in dur)
-    out = []
-    for v in sorted(dur):
-        es, e_f = ef(v) - dur[v], ef(v)
-        ls = makespan - tail(v)
-        out.append((v, dur[v], es, e_f, ls, ls + dur[v], ls - es,
-                    ls - es == 0, makespan))
-    return spark.createDataFrame(
-        out, "scc_id string, duration long, es long, ef long,"
-             " ls long, lf long, slack long, critical boolean,"
-             " makespan long")
-
-
-_KNN_LOOCV_SQL = """
-WITH e AS (
-  SELECT vec_id, label, embedding::DOUBLE[] AS v
-  FROM embeddings ORDER BY vec_id LIMIT 200
-), d AS (
-  SELECT a.vec_id AS qa, b.vec_id AS qb, b.label AS blabel,
-         CAST(floor(list_sum(list_transform(range(1, len(a.v) + 1),
-           j -> (a.v[CAST(j AS INTEGER)] - b.v[CAST(j AS INTEGER)])
-              * (a.v[CAST(j AS INTEGER)] - b.v[CAST(j AS INTEGER)])))
-           * 1000000) AS BIGINT) AS d2_e6
-  FROM e a JOIN e b ON a.vec_id <> b.vec_id
-), nn AS (
-  SELECT qa, blabel FROM (
-    SELECT qa, blabel,
-           row_number() OVER (PARTITION BY qa
-                              ORDER BY d2_e6, qb) AS rn
-    FROM d) q WHERE rn <= 5
-), votes AS (
-  SELECT qa, blabel AS pred, count(*) AS c
-  FROM nn GROUP BY qa, blabel
-), pick AS (
-  SELECT qa, pred FROM (
-    SELECT qa, pred, row_number() OVER (PARTITION BY qa
-                                        ORDER BY c DESC, pred) AS rp
-    FROM votes) q WHERE rp = 1
-), res AS (
-  SELECT e.vec_id, e.label, p.pred, e.label = p.pred AS correct
-  FROM e JOIN pick p ON p.qa = e.vec_id
-)
-SELECT vec_id, label, pred AS pred_label, correct,
-       CAST((SELECT count(*) FILTER (WHERE correct) FROM res)
-            * 1000000 // (SELECT count(*) FROM res) AS BIGINT)
-           AS accuracy_e6
-FROM res
-"""
-
-
-@register("ann_knn_loocv", _KNN_LOOCV_SQL)
-def ann_knn_loocv(spark, sf_dir):
-    """Leave-one-out 5-NN classification audit over the first 200
-    labeled embeddings — the standard sanity measurement run before
-    trusting an embedding space for retrieval: each vector is
-    classified by majority vote of its 5 nearest OTHER vectors
-    (squared-euclidean distances as exact doubles floored ONCE to e6
-    for ordering — the Held-Karp discipline — with (distance, vec_id)
-    and (votes desc, label asc) deterministic tiebreaks) and every
-    per-vector verdict is emitted beside the corpus-level LOOCV
-    accuracy. The classifier-quality complement of the silhouette and
-    label-separation rows. Plan: one bounded self-join (the audit
-    set), two rank windows, one vote aggregate — at production scale
-    the same vote runs over ann_*_topk candidates instead of the
-    exhaustive join."""
-    e = (_t(spark, sf_dir, "embeddings").orderBy("vec_id").limit(200)
-         .select("vec_id", "label",
-                 F.col("embedding").cast("array<double>").alias("v")))
-    a, b = e.alias("a"), e.alias("b")
-    d2 = F.expr("CAST(floor(aggregate(zip_with(a.v, b.v,"
-                " (x, y) -> (x-y)*(x-y)), CAST(0.0 AS DOUBLE),"
-                " (acc, x) -> acc + x) * 1000000) AS BIGINT)")
-    d = (a.join(b, F.col("a.vec_id") != F.col("b.vec_id"))
-         .select(F.col("a.vec_id").alias("qa"),
-                 F.col("b.vec_id").alias("qb"),
-                 F.col("b.label").alias("blabel"),
-                 d2.alias("d2_e6")))
-    nn = (d.withColumn("rn", F.row_number().over(
-        Window.partitionBy("qa").orderBy("d2_e6", "qb")))
-        .filter(F.col("rn") <= 5))
-    votes = nn.groupBy("qa", F.col("blabel").alias("pred")) \
-        .agg(F.count("*").alias("c"))
-    pick = (votes.withColumn("rp", F.row_number().over(
-        Window.partitionBy("qa")
-        .orderBy(F.col("c").desc(), "pred")))
-        .filter(F.col("rp") == 1).select("qa", "pred"))
-    res = (e.join(pick, e["vec_id"] == pick["qa"])
-           .select("vec_id", "label", "pred",
-                   (F.col("label") == F.col("pred")).alias("correct")))
-    acc = res.agg(
-        (F.sum(F.col("correct").cast("long")) * 1000000
-         / F.count("*")).cast("long").alias("accuracy_e6"))
-    return (res.crossJoin(F.broadcast(acc))
-            .select("vec_id", "label",
-                    F.col("pred").alias("pred_label"), "correct",
-                    "accuracy_e6"))
-
-
-_PERCEPTRON_SQL = """
-WITH RECURSIVE ev AS (
-  SELECT CAST(row_number() OVER (ORDER BY ts, event_id) AS BIGINT)
-             AS rn,
-         CAST(1 AS BIGINT) AS x0,
-         CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS x1,
-         CAST(isodow(CAST(ts AS TIMESTAMP)) AS BIGINT) AS x2,
-         CAST(user_id % 10 AS BIGINT) AS x3,
-         CAST(CASE WHEN event_type = 'purchase' THEN 1 ELSE -1 END
-              AS BIGINT) AS y
-  FROM (SELECT * FROM events ORDER BY ts, event_id LIMIT 300)
-), st AS (
-  SELECT CAST(0 AS BIGINT) AS rn, CAST(0 AS BIGINT) AS w0,
-         CAST(0 AS BIGINT) AS w1, CAST(0 AS BIGINT) AS w2,
-         CAST(0 AS BIGINT) AS w3, CAST(0 AS BIGINT) AS mistakes,
-         CAST(0 AS BIGINT) AS margin, CAST(0 AS BIGINT) AS y
-  UNION ALL
-  SELECT ev.rn,
-         s.w0 + CASE WHEN ev.y * (s.w0 * ev.x0 + s.w1 * ev.x1
-                 + s.w2 * ev.x2 + s.w3 * ev.x3) <= 0
-                THEN ev.y * ev.x0 ELSE 0 END,
-         s.w1 + CASE WHEN ev.y * (s.w0 * ev.x0 + s.w1 * ev.x1
-                 + s.w2 * ev.x2 + s.w3 * ev.x3) <= 0
-                THEN ev.y * ev.x1 ELSE 0 END,
-         s.w2 + CASE WHEN ev.y * (s.w0 * ev.x0 + s.w1 * ev.x1
-                 + s.w2 * ev.x2 + s.w3 * ev.x3) <= 0
-                THEN ev.y * ev.x2 ELSE 0 END,
-         s.w3 + CASE WHEN ev.y * (s.w0 * ev.x0 + s.w1 * ev.x1
-                 + s.w2 * ev.x2 + s.w3 * ev.x3) <= 0
-                THEN ev.y * ev.x3 ELSE 0 END,
-         s.mistakes + CASE WHEN ev.y * (s.w0 * ev.x0 + s.w1 * ev.x1
-                 + s.w2 * ev.x2 + s.w3 * ev.x3) <= 0
-                THEN 1 ELSE 0 END,
-         s.w0 * ev.x0 + s.w1 * ev.x1 + s.w2 * ev.x2 + s.w3 * ev.x3,
-         ev.y
-  FROM st s JOIN ev ON ev.rn = s.rn + 1
-)
-SELECT rn AS step, y, margin, w0, w1, w2, w3, mistakes
-FROM st WHERE rn >= 1
-"""
-
-
-@register("q_events_perceptron", _PERCEPTRON_SQL)
-def q_events_perceptron(spark, sf_dir):
-    """Rosenblatt perceptron training REPLAY over the first 300 events
-    in stable (ts, event_id) order — the online mistake-bound
-    classifier run exactly as the theory states it: integer features
-    (bias, hour, ISO weekday, user-id bucket), target +1 for purchase,
-    predict sign(w.x), update w += y.x ONLY on a mistake (margin <= 0,
-    zero counted as wrong per the classic convention). The ENTIRE
-    training trajectory is emitted — per-step pre-update margin,
-    post-step weight vector, running mistake count — so one slipped
-    update anywhere shifts every later weight and flips the hash.
-    Everything is integer arithmetic; the online-learning sibling of
-    the Elo replay and the mistake-driven complement of the closed-
-    form decision stump. Engine: driver fold over 300 rows (sequential
-    by definition); oracle: the identical scalar recursion."""
-    ev = (_t(spark, sf_dir, "events").orderBy("ts", "event_id")
-          .limit(300)
-          .select(F.lit(1).cast("long").alias("x0"),
-                  F.hour("ts").cast("long").alias("x1"),
-                  (F.weekday("ts") + 1).cast("long").alias("x2"),
-                  (F.col("user_id") % 10).cast("long").alias("x3"),
-                  F.when(F.col("event_type") == "purchase", 1)
-                  .otherwise(-1).cast("long").alias("y"))
-          .collect())
-    w = [0, 0, 0, 0]
-    mistakes = 0
-    out = []
-    for step, r in enumerate(ev, start=1):
-        x = [r["x0"], r["x1"], r["x2"], r["x3"]]
-        margin = sum(wi * xi for wi, xi in zip(w, x))
-        if r["y"] * margin <= 0:
-            w = [wi + r["y"] * xi for wi, xi in zip(w, x)]
-            mistakes += 1
-        out.append((step, r["y"], margin, w[0], w[1], w[2], w[3],
-                    mistakes))
-    return spark.createDataFrame(
-        out, "step long, y long, margin long, w0 long, w1 long,"
-             " w2 long, w3 long, mistakes long")
-
-
-def _cbor_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the CBOR walk: re-derived from the pure
-    cbor_file_spec formulas — a tolerated non-minimal argument, a
-    wrong boundary promotion or an unsorted map slipping through
-    flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.cborfile import (
-        _render, build_cbor, cbor_file_spec,
-    )
-
-    def stats(obj, depth):
-        agg = {"ints": 0, "texts": 0, "arrays": 0, "maps": 0,
-               "depth": depth, "sum": 0}
-        if isinstance(obj, bool) or obj is None:
-            return agg
-        if isinstance(obj, int):
-            agg["ints"] = 1
-            agg["sum"] = obj
-            return agg
-        if isinstance(obj, str):
-            agg["texts"] = 1
-            return agg
-        if isinstance(obj, bytes):
-            return agg
-        kids = (list(obj.values()) if isinstance(obj, dict)
-                else list(obj))
-        if isinstance(obj, dict):
-            agg["maps"] = 1
-            kids = kids + list(obj.keys())
-        else:
-            agg["arrays"] = 1
-        for k in kids:
-            st = stats(k, depth + 1)
-            for key in ("ints", "texts", "arrays", "maps", "sum"):
-                agg[key] += st[key]
-            agg["depth"] = max(agg["depth"], st["depth"])
-        return agg
-
-    rows = []
-    for i in range(n):
-        spec = cbor_file_spec(i, seed)
-        st = stats(spec, 0)
-        # keys of maps are texts too but the reader counts ONLY
-        # values+keys it decodes; mirror by walking exactly like the
-        # reader: the reader counts every decoded item, keys included
-        rows.append(
-            f"({i}, {len(spec)}, {st['ints']}, {st['texts']},"
-            f" {st['arrays']}, {st['maps']}, {st['depth']},"
-            f" {st['sum']}, {len(build_cbor(i, seed))},"
-            f" '{_h.md5(_render(spec).encode()).hexdigest()}')")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id,"
-        " CAST(n_top_items AS INTEGER) AS n_top_items,"
-        " CAST(n_ints AS INTEGER) AS n_ints,"
-        " CAST(n_texts AS INTEGER) AS n_texts,"
-        " CAST(n_arrays AS INTEGER) AS n_arrays,"
-        " CAST(n_maps AS INTEGER) AS n_maps,"
-        " CAST(max_depth AS INTEGER) AS max_depth,"
-        " CAST(int_sum AS BIGINT) AS int_sum,"
-        " CAST(total_bytes AS BIGINT) AS total_bytes, content_md5"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, n_top_items, n_ints, n_texts, n_arrays, n_maps,"
-        " max_depth, int_sum, total_bytes, content_md5)")
-
-
-@register("multimodal_cbor_records", _cbor_fixture_sql())
-def multimodal_cbor_records(spark, sf_dir):
-    """CBOR manifest via the HAND-ROLLED RFC 8949 walk
-    (sources/cborfile.cbor_manifest) with the CORE DETERMINISTIC
-    ENCODING rules ENFORCED, not merely accepted: every integer
-    argument must be shortest-form (fixtures straddle the
-    23/24, 255/256, 65535/65536, 2^32 promotion boundaries — a reader
-    tolerating a 2-byte 10 raises), map keys must be sorted bytewise
-    by their encodings with duplicates rejected, and floats, tags,
-    indefinite-length items and unknown simple values are honestly
-    refused — the bencode/msgpack canonical-walk discipline applied
-    to CBOR's argument grammar, golden-pinned against the RFC 8949
-    appendix-A vectors in tests. One mapInPandas over the binary
-    column, fully distributed."""
-    from .sources.cborfile import cbor_manifest, synthetic_cbors
-    return cbor_manifest(synthetic_cbors(spark, 30))
-
-
-_B85_CS = ("0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZ"
-           "abcdefghijklmnopqrstuvwxyz!#$%&()*+-;<=>?@^_`{|}~")
-
-_B85_SQL = """
-WITH base AS (
-  SELECT doc_id,
-         regexp_replace(substr(text, 1, 200), '[^ -~]', '', 'g') AS s
-  FROM documents ORDER BY doc_id LIMIT 100
-), b4 AS (
-  SELECT doc_id, substr(s, 1, len(s) - len(s) % 4) AS s4 FROM base
-), g0 AS (
-  SELECT doc_id, s4, unnest(range(0, len(s4) // 4)) AS g FROM b4
-), grp AS (
-  SELECT doc_id, g,
-         substr(s4, CAST(g * 4 + 1 AS INTEGER), 4) AS chunk
-  FROM g0
-), vals AS (
-  SELECT doc_id, g, chunk,
-         ord(substr(chunk, 1, 1)) * 16777216
-       + ord(substr(chunk, 2, 1)) * 65536
-       + ord(substr(chunk, 3, 1)) * 256
-       + ord(substr(chunk, 4, 1)) AS val
-  FROM grp
-), enc AS (
-  SELECT doc_id, g, chunk,
-         substr('{cs}', CAST(val // 52200625 % 85 + 1 AS INTEGER), 1)
-      || substr('{cs}', CAST(val // 614125 % 85 + 1 AS INTEGER), 1)
-      || substr('{cs}', CAST(val // 7225 % 85 + 1 AS INTEGER), 1)
-      || substr('{cs}', CAST(val // 85 % 85 + 1 AS INTEGER), 1)
-      || substr('{cs}', CAST(val % 85 + 1 AS INTEGER), 1) AS e5
-  FROM vals
-), dec AS (
-  SELECT doc_id, g, chunk, e5,
-         (strpos('{cs}', substr(e5, 1, 1)) - 1) * 52200625
-       + (strpos('{cs}', substr(e5, 2, 1)) - 1) * 614125
-       + (strpos('{cs}', substr(e5, 3, 1)) - 1) * 7225
-       + (strpos('{cs}', substr(e5, 4, 1)) - 1) * 85
-       + (strpos('{cs}', substr(e5, 5, 1)) - 1) AS val2
-  FROM enc
-), rec AS (
-  SELECT doc_id, g, e5,
-         chr(CAST(val2 // 16777216 % 256 AS INTEGER))
-      || chr(CAST(val2 // 65536 % 256 AS INTEGER))
-      || chr(CAST(val2 // 256 % 256 AS INTEGER))
-      || chr(CAST(val2 % 256 AS INTEGER)) AS r4
-  FROM dec
-), agg AS (
-  SELECT doc_id,
-         coalesce(string_agg(e5, '' ORDER BY g), '') AS encoded,
-         coalesce(string_agg(r4, '' ORDER BY g), '') AS recon
-  FROM rec GROUP BY doc_id
-)
-SELECT b.doc_id, CAST(len(b.s4) AS BIGINT) AS n_bytes,
-       CAST(len(coalesce(a.encoded, '')) AS BIGINT) AS enc_len,
-       md5(coalesce(a.encoded, '')) AS encoded_md5,
-       coalesce(a.recon, '') = b.s4 AS roundtrip_ok,
-       CASE WHEN len(b.s4) > 0
-            THEN CAST(len(coalesce(a.encoded, '')) * 1000000
-                      // len(b.s4) AS BIGINT) END AS expansion_e6
-FROM b4 b LEFT JOIN agg a ON a.doc_id = b.doc_id
-""".replace("{cs}", _B85_CS)
-
-
-@register("text_base85_codec", _B85_SQL)
-def text_base85_codec(spark, sf_dir):
-    """Base85 codec IN-ENGINE over the printable-ASCII document
-    prefixes (the git-binary-patch / RFC 1924 charset stdlib's
-    b85encode uses, golden-pinned against it in tests): each 4-byte
-    group becomes one base-85 number rendered as 5 charset digits —
-    pure positional arithmetic, no bit twiddling, no UDF — and the
-    DECODE path re-derives every byte from the encoded characters via
-    charset position lookup, with round-trip equality to the original
-    PINNED per document beside the 5/4 expansion ratio. Both engines
-    run the identical integer expressions (ord/chr/strpos only), so a
-    single off-by-one in any power of 85 or 256 flips the hash.
-    Prefixes are truncated to whole 4-byte groups (the padding-free
-    core of the codec; stdlib parity under the same truncation is the
-    test's job). Plan: one group explode + one ordered aggregate per
-    document — map-side arithmetic, the 10^9-document shape."""
-    base = (_t(spark, sf_dir, "documents").orderBy("doc_id")
-            .limit(100)
-            .select("doc_id",
-                    F.regexp_replace(F.substring("text", 1, 200),
-                                     "[^ -~]", "").alias("s")))
-    b4 = base.select(
-        "doc_id",
-        F.expr("substring(s, 1, length(s) - length(s) % 4)")
-        .alias("s4"))
-    g0 = (b4.filter(F.length("s4") >= 4)
-          .select("doc_id", "s4",
-                  F.explode(F.sequence(
-                      F.lit(0),
-                      (F.length("s4") / 4).cast("int") - 1))
-                  .alias("g")))
-    grp = g0.select(
-        "doc_id", "g",
-        F.expr("substring(s4, g * 4 + 1, 4)").alias("chunk"))
-    vals = grp.withColumn(
-        "val",
-        F.expr("ascii(substring(chunk, 1, 1)) * 16777216"
-               " + ascii(substring(chunk, 2, 1)) * 65536"
-               " + ascii(substring(chunk, 3, 1)) * 256"
-               " + ascii(substring(chunk, 4, 1))"))
-    e5 = F.concat(
-        F.expr(f"substring('{_B85_CS}',"
-               " CAST(val div 52200625 % 85 + 1 AS INT), 1)"),
-        F.expr(f"substring('{_B85_CS}',"
-               " CAST(val div 614125 % 85 + 1 AS INT), 1)"),
-        F.expr(f"substring('{_B85_CS}',"
-               " CAST(val div 7225 % 85 + 1 AS INT), 1)"),
-        F.expr(f"substring('{_B85_CS}',"
-               " CAST(val div 85 % 85 + 1 AS INT), 1)"),
-        F.expr(f"substring('{_B85_CS}',"
-               " CAST(val % 85 + 1 AS INT), 1)"))
-    enc = vals.withColumn("e5", e5)
-    val2 = F.expr(
-        f"(instr('{_B85_CS}', substring(e5, 1, 1)) - 1) * 52200625"
-        f" + (instr('{_B85_CS}', substring(e5, 2, 1)) - 1) * 614125"
-        f" + (instr('{_B85_CS}', substring(e5, 3, 1)) - 1) * 7225"
-        f" + (instr('{_B85_CS}', substring(e5, 4, 1)) - 1) * 85"
-        f" + (instr('{_B85_CS}', substring(e5, 5, 1)) - 1)")
-    rec = (enc.withColumn("val2", val2)
-           .withColumn("r4", F.expr(
-               "concat(char(val2 div 16777216 % 256),"
-               " char(val2 div 65536 % 256),"
-               " char(val2 div 256 % 256), char(val2 % 256))")))
-    agg = (rec.groupBy("doc_id")
-           .agg(F.concat_ws("", F.array_sort(F.collect_list(
-                F.struct("g", "e5"))).getField("e5")).alias("encoded"),
-                F.concat_ws("", F.array_sort(F.collect_list(
-                    F.struct("g", "r4"))).getField("r4"))
-                .alias("recon")))
-    return (b4.join(agg, "doc_id", "left")
-            .select("doc_id",
-                    F.length("s4").cast("long").alias("n_bytes"),
-                    F.length(F.coalesce("encoded", F.lit("")))
-                    .cast("long").alias("enc_len"),
-                    F.md5(F.coalesce("encoded", F.lit("")))
-                    .alias("encoded_md5"),
-                    (F.coalesce("recon", F.lit("")) == F.col("s4"))
-                    .alias("roundtrip_ok"),
-                    F.when(F.length("s4") > 0, F.expr(
-                        "CAST(length(coalesce(encoded, '')) * 1000000"
-                        " div length(s4) AS BIGINT)"))
-                    .alias("expansion_e6")))
-
-
-_NEWSVENDOR_SQL = """
-WITH dem AS (
-  SELECT CAST(o_orderdate AS DATE) AS day,
-         CAST(count(*) AS BIGINT) AS d
-  FROM orders GROUP BY 1
-), n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM dem),
-pick AS (
-  SELECT d AS fractile_optimal FROM (
-    SELECT d, row_number() OVER (ORDER BY d) AS rn FROM dem) q, n
-  WHERE rn = (n.n * 3 + 3) // 4
-), cand AS (SELECT DISTINCT d AS s FROM dem),
-cost AS (
-  SELECT c.s,
-         CAST(sum(CASE WHEN dem.d > c.s THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_under_days,
-         CAST(sum(CASE WHEN dem.d < c.s THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_over_days,
-         CAST(sum(CASE WHEN dem.d = c.s THEN 1 ELSE 0 END)
-              AS BIGINT) AS exact_match_days,
-         CAST(sum(3 * greatest(dem.d - c.s, 0)
-                  + greatest(c.s - dem.d, 0)) AS BIGINT) AS total_cost
-  FROM cand c, dem GROUP BY c.s
-), mn AS (SELECT min(total_cost) AS mc FROM cost)
-SELECT c.s AS stock_level, c.n_under_days, c.n_over_days,
-       c.exact_match_days, c.total_cost,
-       c.total_cost = (SELECT mc FROM mn) AS is_min_cost,
-       (SELECT fractile_optimal FROM pick) AS fractile_optimal,
-       (SELECT total_cost FROM cost
-        WHERE s = (SELECT fractile_optimal FROM pick))
-           = (SELECT mc FROM mn) AS fractile_is_min
-FROM cost c
-"""
-
-
-@register("q_orders_newsvendor", _NEWSVENDOR_SQL)
-def q_orders_newsvendor(spark, sf_dir):
-    """Newsvendor stocking decision on the real daily order-demand
-    distribution (understock cost 3, overstock cost 1, so the critical
-    fractile is 3/4): the optimal stock is the ceil(3n/4)-th order
-    statistic of daily demand — picked by exact integer rank, no
-    quantile interpolation — and the claim is AUDITED by brute force:
-    every distinct demand level is costed exactly (3·understock +
-    1·overstock summed over all days, pure integers) and the theorem's
-    pick is verified to hit the minimum cost, PINNED TRUE on every
-    row. Each candidate row carries its under/over/exact day counts
-    and total cost, so the whole discrete cost curve is in the result.
-    The stochastic-inventory sibling of the deterministic EOQ and
-    Wagner-Whitin rows. Plan: one day aggregate, one distinct-level
-    cross cost aggregate over O(days) rows."""
-    dem = (_t(spark, sf_dir, "orders")
-           .groupBy(F.col("o_orderdate").cast("date").alias("day"))
-           .agg(F.count("*").cast("long").alias("d")))
-    n = dem.count()
-    rank = (n * 3 + 3) // 4
-    fopt = int(dem.select("d", F.row_number().over(
-        Window.orderBy("d")).alias("rn"))
-        .filter(F.col("rn") == rank).collect()[0]["d"])
-    cand = dem.select(F.col("d").alias("s")).distinct()
-    cost = (cand.crossJoin(dem.select("d"))
-            .groupBy("s")
-            .agg(F.sum(F.when(F.col("d") > F.col("s"), 1)
-                       .otherwise(0)).cast("long")
-                 .alias("n_under_days"),
-                 F.sum(F.when(F.col("d") < F.col("s"), 1)
-                       .otherwise(0)).cast("long")
-                 .alias("n_over_days"),
-                 F.sum(F.when(F.col("d") == F.col("s"), 1)
-                       .otherwise(0)).cast("long")
-                 .alias("exact_match_days"),
-                 F.sum(F.lit(3) * F.greatest(F.col("d") - F.col("s"),
-                                             F.lit(0))
-                       + F.greatest(F.col("s") - F.col("d"),
-                                    F.lit(0))).cast("long")
-                 .alias("total_cost")))
-    mc = int(cost.agg(F.min("total_cost")).collect()[0][0])
-    fcost = int(cost.filter(F.col("s") == fopt)
-                .collect()[0]["total_cost"])
-    return cost.select(
-        F.col("s").alias("stock_level"), "n_under_days",
-        "n_over_days", "exact_match_days", "total_cost",
-        (F.col("total_cost") == mc).alias("is_min_cost"),
-        F.lit(fopt).cast("long").alias("fractile_optimal"),
-        F.lit(fcost == mc).alias("fractile_is_min"))
-
-
-_CLIFF_SQL = """
-WITH v AS (
-  SELECT event_type, CAST(round(value * 100) AS BIGINT) AS v
-  FROM events WHERE event_type IN ('click', 'purchase')
-), h AS (
-  SELECT v,
-         CAST(count(*) FILTER (WHERE event_type = 'click')
-              AS BIGINT) AS c1,
-         CAST(count(*) FILTER (WHERE event_type = 'purchase')
-              AS BIGINT) AS c2
-  FROM v GROUP BY v
-), w AS (
-  SELECT v, c1, c2,
-         coalesce(sum(c2) OVER (ORDER BY v
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             AS p_below,
-         coalesce(sum(c1) OVER (ORDER BY v
-             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-             AS k_below
-  FROM h
-), agg AS (
-  SELECT CAST(sum(c1) AS BIGINT) AS n,
-         CAST(sum(c2) AS BIGINT) AS m,
-         CAST(sum(c1 * p_below) AS BIGINT) AS gt,
-         CAST(sum(c2 * k_below) AS BIGINT) AS lt,
-         CAST(sum(c1 * c2) AS BIGINT) AS ties
-  FROM w
-)
-SELECT n AS n_clicks, m AS n_purchases, gt AS n_gt, lt AS n_lt,
-       ties AS n_ties, 2 * gt + ties AS u2,
-       CAST((gt - lt) * 1000000 // (n * m) AS BIGINT)
-           AS cliff_delta_e6,
-       CASE WHEN abs(gt - lt) * 1000000 // (n * m) < 147000
-            THEN 'negligible'
-            WHEN abs(gt - lt) * 1000000 // (n * m) < 330000
-            THEN 'small'
-            WHEN abs(gt - lt) * 1000000 // (n * m) < 474000
-            THEN 'medium' ELSE 'large' END AS magnitude
-FROM agg
-"""
-
-
-@register("q_events_cliff_delta", _CLIFF_SQL)
-def q_events_cliff_delta(spark, sf_dir):
-    """Cliff's delta ordinal effect size between the click and
-    purchase value distributions — the distribution-free complement of
-    Mann-Whitney that reports HOW MUCH two samples dominate each
-    other, not just whether: delta = (#{x>y} - #{x<y}) / nm over all
-    cross pairs, computed EXACTLY without materializing the nm pairs
-    (e2-integer value histogram, one ordered prefix-sum window, then
-    sum(c1 * purchases_below) / sum(c2 * clicks_below) — the
-    O(distinct values) formulation), with tie mass and the doubled
-    Mann-Whitney U = 2gt + ties riding along and Romano's
-    negligible/small/medium/large banding decided on the same floored
-    integers in both engines. Plan: one histogram aggregate + one
-    window — never the quadratic pair join."""
-    v = (_t(spark, sf_dir, "events")
-         .filter(F.col("event_type").isin("click", "purchase"))
-         .select("event_type",
-                 F.round(F.col("value") * 100).cast("long")
-                 .alias("v")))
-    h = v.groupBy("v").agg(
-        F.sum(F.when(F.col("event_type") == "click", 1)
-              .otherwise(0)).cast("long").alias("c1"),
-        F.sum(F.when(F.col("event_type") == "purchase", 1)
-              .otherwise(0)).cast("long").alias("c2"))
-    wp = (Window.orderBy("v")
-          .rowsBetween(Window.unboundedPreceding, -1))
-    w = h.select(
-        "v", "c1", "c2",
-        F.coalesce(F.sum("c2").over(wp), F.lit(0)).alias("p_below"),
-        F.coalesce(F.sum("c1").over(wp), F.lit(0)).alias("k_below"))
-    agg = w.agg(
-        F.sum("c1").cast("long").alias("n"),
-        F.sum("c2").cast("long").alias("m"),
-        F.sum(F.col("c1") * F.col("p_below")).cast("long")
-        .alias("gt"),
-        F.sum(F.col("c2") * F.col("k_below")).cast("long")
-        .alias("lt"),
-        F.sum(F.col("c1") * F.col("c2")).cast("long").alias("ties"))
-    d_e6 = F.expr("(gt - lt) * 1000000 div (n * m)")
-    mag_e6 = F.expr("abs(gt - lt) * 1000000 div (n * m)")
-    return agg.select(
-        F.col("n").alias("n_clicks"), F.col("m").alias("n_purchases"),
-        F.col("gt").alias("n_gt"), F.col("lt").alias("n_lt"),
-        F.col("ties").alias("n_ties"),
-        (F.lit(2) * F.col("gt") + F.col("ties")).alias("u2"),
-        d_e6.cast("long").alias("cliff_delta_e6"),
-        F.when(mag_e6 < 147000, "negligible")
-        .when(mag_e6 < 330000, "small")
-        .when(mag_e6 < 474000, "medium").otherwise("large")
-        .alias("magnitude"))
-
-
-_EMD_SQL = """
-WITH h AS (
-  SELECT CAST(hour(CAST(ts AS TIMESTAMP)) AS BIGINT) AS hr,
-         CAST(count(*) FILTER (WHERE event_type = 'click')
-              AS BIGINT) AS a,
-         CAST(count(*) FILTER (WHERE event_type = 'purchase')
-              AS BIGINT) AS b
-  FROM events WHERE event_type IN ('click', 'purchase')
-  GROUP BY 1
-), hours AS (
-  SELECT CAST(unnest(range(0, 24)) AS BIGINT) AS hr
-), tot AS (
-  SELECT sum(a) AS ca, sum(b) AS cb FROM h
-), m AS (
-  SELECT hours.hr,
-         coalesce(h.a, 0) * (SELECT cb FROM tot) AS am,
-         coalesce(h.b, 0) * (SELECT ca FROM tot) AS bm
-  FROM hours LEFT JOIN h ON h.hr = hours.hr
-), c AS (
-  SELECT hr, am, bm,
-         sum(am - bm) OVER (ORDER BY hr) AS flow
-  FROM m
-), e AS (
-  SELECT CAST(sum(abs(flow)) FILTER (WHERE hr < 23) AS HUGEINT)
-             AS emd
-  FROM c
-)
-SELECT c.hr, c.am AS click_mass, c.bm AS purchase_mass,
-       c.flow AS cum_flow,
-       CAST((SELECT emd FROM e) AS BIGINT) AS emd_total,
-       CAST((SELECT emd FROM e) * 1000000
-            // ((SELECT ca FROM tot) * (SELECT cb FROM tot))
-            AS BIGINT) AS mean_hours_moved_e6
-FROM c
-"""
-
-
-@register("q_events_emd_hourly", _EMD_SQL)
-def q_events_emd_hourly(spark, sf_dir):
-    """EXACT 1-D earth mover's distance (Wasserstein-1 on the hour
-    line) between the click and purchase hour-of-day distributions:
-    cross-scale the two histograms to a common integer mass (each side
-    multiplied by the other's total — no normalization floats), then
-    EMD = sum over bin boundaries of |cumulative difference| — the
-    closed form that makes 1-D optimal transport a prefix-sum window
-    instead of a linear program. The signed cumulative flow at every
-    hour is emitted whole (its sign says which direction mass crosses
-    that boundary), with the total and the mean-hours-moved-per-pair
-    normalization floored once to e6. Zero floats anywhere; the
-    transport complement of the Wasserstein row on values and the
-    exact baseline the Sinkhorn scaling row approximates. Plan: one
-    24-bin histogram + one window."""
-    e = (_t(spark, sf_dir, "events")
-         .filter(F.col("event_type").isin("click", "purchase"))
-         .groupBy(F.hour("ts").cast("long").alias("hr"))
-         .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                    .otherwise(0)).cast("long").alias("a"),
-              F.sum(F.when(F.col("event_type") == "purchase", 1)
-                    .otherwise(0)).cast("long").alias("b")))
-    hours = spark.range(0, 24).select(F.col("id").alias("hr"))
-    tot = e.agg(F.sum("a").alias("ca"), F.sum("b").alias("cb"))
-    m = (hours.join(e, "hr", "left").crossJoin(F.broadcast(tot))
-         .select("hr",
-                 (F.coalesce("a", F.lit(0)) * F.col("cb"))
-                 .alias("am"),
-                 (F.coalesce("b", F.lit(0)) * F.col("ca"))
-                 .alias("bm"), "ca", "cb"))
-    c = m.withColumn(
-        "flow", F.sum(F.col("am") - F.col("bm"))
-        .over(Window.orderBy("hr")))
-    agg = c.agg(F.sum(F.when(F.col("hr") < 23, F.abs("flow"))
-                      .otherwise(0)).alias("emd"),
-                F.first("ca").alias("ca"), F.first("cb").alias("cb"))
-    return (c.drop("ca", "cb").crossJoin(F.broadcast(agg))
-            .select("hr", F.col("am").alias("click_mass"),
-                    F.col("bm").alias("purchase_mass"),
-                    F.col("flow").alias("cum_flow"),
-                    F.col("emd").cast("long").alias("emd_total"),
-                    F.expr("CAST(emd * 1000000 div (ca * cb)"
-                           " AS BIGINT)")
-                    .alias("mean_hours_moved_e6")))
-
-
-_SINKHORN_SQL = """
-WITH RECURSIVE seq AS (
-  SELECT user_id, event_type,
-         lag(event_type) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) AS prev
-  FROM events
-), kc AS (
-  SELECT prev AS a, event_type AS b, CAST(count(*) AS HUGEINT) AS k
-  FROM seq WHERE prev IS NOT NULL GROUP BY 1, 2
-), ty AS (
-  SELECT t, CAST(row_number() OVER (ORDER BY t) AS INTEGER) AS ti
-  FROM (SELECT DISTINCT event_type AS t FROM events) q
-), consts AS (
-  SELECT (SELECT list(l ORDER BY i) FROM (
-            SELECT x.ti AS i,
-                   list(coalesce(kc.k, 0) ORDER BY y.ti) AS l
-            FROM ty x JOIN ty y ON true
-            LEFT JOIN kc ON kc.a = x.t AND kc.b = y.t
-            GROUP BY x.ti) q) AS K,
-         (SELECT CAST(count(*) AS INTEGER) FROM ty) AS nt
-), st AS (
-  SELECT 0 AS it,
-         list_transform(range(1, c.nt + 1),
-                        j -> CAST(1000000000 AS HUGEINT)) AS cv,
-         c.K AS K, c.nt AS nt
-  FROM consts c
-  UNION ALL
-  SELECT s.it + 1,
-         list_transform(range(1, s.nt + 1), j ->
-           CAST('1000000000000000000' AS HUGEINT)
-           // list_sum(list_transform(range(1, s.nt + 1), i ->
-                s.K[i][j]
-                * (CAST('1000000000000000000' AS HUGEINT)
-                   // list_sum(list_transform(range(1, s.nt + 1),
-                        j2 -> s.K[i][j2] * s.cv[j2])))))),
-         s.K, s.nt
-  FROM st s WHERE s.it < 8
-), fin AS (
-  SELECT cv, K, nt FROM st WHERE it = 8
-), rv AS (
-  SELECT list_transform(range(1, f.nt + 1), i ->
-           CAST('1000000000000000000' AS HUGEINT)
-           // list_sum(list_transform(range(1, f.nt + 1),
-                j -> f.K[i][j] * f.cv[j]))) AS rv,
-         f.cv, f.K, f.nt
-  FROM fin f
-), cells AS (
-  SELECT x.ti AS i, y.ti AS j, x.t AS src_type, y.t AS dst_type,
-         r.K[x.ti][y.ti] AS k,
-         r.rv[x.ti] * r.K[x.ti][y.ti] * r.cv[y.ti]
-           // 1000000000000000000 AS p_e9
-  FROM rv r, ty x, ty y
-), devs AS (
-  SELECT max(abs(rs - 1000000000)) AS rdev,
-         max(abs(cs - 1000000000)) AS cdev
-  FROM (SELECT i, sum(p_e9) AS rs FROM cells GROUP BY i) a,
-       (SELECT j, sum(p_e9) AS cs FROM cells GROUP BY j) b
-)
-SELECT src_type, dst_type, CAST(k AS BIGINT) AS k_count,
-       CAST(p_e9 AS BIGINT) AS p_e9,
-       CAST((SELECT rdev FROM devs) AS BIGINT) AS max_row_dev_e9,
-       CAST((SELECT cdev FROM devs) AS BIGINT) AS max_col_dev_e9,
-       8 AS n_iters
-FROM cells
-"""
-
-
-@register("q_events_sinkhorn_scaling", _SINKHORN_SQL)
-def q_events_sinkhorn_scaling(spark, sf_dir):
-    """Sinkhorn-Knopp doubly-stochastic scaling of the 5x5 event-type
-    transition-count matrix — the matrix-balancing primitive behind
-    entropic optimal transport and attention normalization — run for 8
-    alternating column/row scalings ENTIRELY in e18/e9 fixed point:
-    every scaling factor is one integer division (1e18 // sum of
-    HUGEINT products), so both engines walk bit-identical iterates and
-    the result needs no convergence tolerance to compare. Each final
-    cell P_ij = r_i K_ij c_j is emitted at e9 beside the raw count and
-    the worst row/column marginal deviations from exact stochasticity
-    (row deviations tiny since rows scale last; columns carry the
-    residual — the asymmetry is the algorithm's signature). Engine:
-    driver fold over the collected 5x5 matrix (vocabulary-bounded);
-    oracle: identical nested-list recursion carrying the column
-    vector."""
-    e = _t(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    seq = e.select("event_type",
-                   F.lag("event_type").over(w).alias("prev"))
-    kc = {(r["prev"], r["event_type"]): int(r["k"]) for r in
-          seq.filter(F.col("prev").isNotNull())
-          .groupBy("prev", "event_type")
-          .agg(F.count("*").alias("k")).collect()}
-    types = sorted({t for pair in kc for t in pair}
-                   | {r["event_type"] for r in
-                      e.select("event_type").distinct().collect()})
-    n = len(types)
-    K = [[kc.get((a, b), 0) for b in types] for a in types]
-    E18 = 10 ** 18
-    cv = [10 ** 9] * n
-    for _ in range(8):
-        rv = [E18 // sum(K[i][j2] * cv[j2] for j2 in range(n))
-              for i in range(n)]
-        cv = [E18 // sum(K[i][j] * rv[i] for i in range(n))
-              for j in range(n)]
-    rv = [E18 // sum(K[i][j] * cv[j] for j in range(n))
-          for i in range(n)]
-    p = [[rv[i] * K[i][j] * cv[j] // E18 for j in range(n)]
-         for i in range(n)]
-    rdev = max(abs(sum(p[i]) - 10 ** 9) for i in range(n))
-    cdev = max(abs(sum(p[i][j] for i in range(n)) - 10 ** 9)
-               for j in range(n))
-    out = [(types[i], types[j], K[i][j], p[i][j], rdev, cdev, 8)
-           for i in range(n) for j in range(n)]
-    return spark.createDataFrame(
-        out, "src_type string, dst_type string, k_count long,"
-             " p_e9 long, max_row_dev_e9 long, max_col_dev_e9 long,"
-             " n_iters int")
-
-
-def _xpm_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the XPM walk: re-derived from the pure xpm_file_spec
-    formulas — a bytewise row index under cpp=2, a missed 'None'
-    sentinel or a palette-order slip flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.xpmfile import (
-        pixel_index, xpm_file_spec,
-    )
-    rows = []
-    for i in range(n):
-        sp = xpm_file_spec(i, seed)
-        pal = "|".join(f"{k}={v}" for k, v in zip(sp["keys"],
-                                                  sp["colors"]))
-        grid = [[pixel_index(i, x, y, sp["ncolors"])
-                 for x in range(sp["width"])]
-                for y in range(sp["height"])]
-        pix = "|".join("".join(str(c) for c in row) for row in grid)
-        ntr = sum(1 for row in grid for c in row
-                  if sp["colors"][c] == "None")
-        rows.append(
-            f"({i}, {sp['width']}, {sp['height']}, {sp['ncolors']},"
-            f" {sp['cpp']}, {ntr},"
-            f" {sum(c for row in grid for c in row)},"
-            f" '{_h.md5(pal.encode()).hexdigest()}',"
-            f" '{_h.md5(pix.encode()).hexdigest()}')")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id,"
-        " CAST(width AS INTEGER) AS width,"
-        " CAST(height AS INTEGER) AS height,"
-        " CAST(n_colors AS INTEGER) AS n_colors,"
-        " CAST(cpp AS INTEGER) AS cpp,"
-        " CAST(n_transparent AS INTEGER) AS n_transparent,"
-        " CAST(index_sum AS BIGINT) AS index_sum,"
-        " palette_md5, pixels_md5"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, width, height, n_colors, cpp, n_transparent,"
-        " index_sum, palette_md5, pixels_md5)")
-
-
-@register("multimodal_xpm_features", _xpm_fixture_sql())
-def multimodal_xpm_features(spark, sf_dir):
-    """XPM (X PixMap v3) manifest via the HAND-ROLLED text-image walk
-    (sources/xpmfile.xpm_manifest): C block comments stripped, strings
-    extracted, the "<w> <h> <ncolors> <cpp>" values line parsed, the
-    color table mapped with the 'None' transparency sentinel counted,
-    and characters-per-pixel of BOTH 1 and 2 exercised — the cpp=2
-    files break any reader that indexes pixel rows bytewise. Declared
-    geometry is VERIFIED against actual rows: wrong row length,
-    unknown pixel key, duplicate palette key, wrong string count and
-    cpp > 2 are all refused. The text-encoded image surface beside the
-    binary BMP/PNG/GIF walks; one mapInPandas over the binary column,
-    fully distributed."""
-    from .sources.xpmfile import synthetic_xpms, xpm_manifest
-    return xpm_manifest(synthetic_xpms(spark, 30))
-
-
-_CONDORCET_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, event_type,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-), ranked AS (
-  SELECT day, event_type,
-         CAST(row_number() OVER (PARTITION BY day
-                                 ORDER BY c DESC, event_type)
-              AS BIGINT) AS rk,
-         CAST(count(*) OVER (PARTITION BY day) AS BIGINT) AS nt
-  FROM daily
-), pair AS (
-  SELECT a.event_type AS x, b.event_type AS y,
-         CAST(sum(CASE WHEN a.rk < b.rk THEN 1 ELSE 0 END)
-              AS BIGINT) AS wins
-  FROM ranked a JOIN ranked b
-    ON a.day = b.day AND a.event_type <> b.event_type
-  GROUP BY 1, 2
-), duel AS (
-  SELECT p.x, p.y, p.wins, q.wins AS losses
-  FROM pair p JOIN pair q ON q.x = p.y AND q.y = p.x
-), cop AS (
-  SELECT x AS event_type,
-         CAST(sum(CASE WHEN wins > losses THEN 1 ELSE 0 END)
-              AS BIGINT) AS pw,
-         CAST(sum(CASE WHEN wins < losses THEN 1 ELSE 0 END)
-              AS BIGINT) AS pl,
-         CAST(sum(CASE WHEN wins = losses THEN 1 ELSE 0 END)
-              AS BIGINT) AS pt
-  FROM duel GROUP BY 1
-), borda AS (
-  SELECT event_type, CAST(sum(nt - rk) AS BIGINT) AS borda
-  FROM ranked GROUP BY 1
-), nn AS (SELECT CAST(count(DISTINCT event_type) AS BIGINT) AS k
-          FROM daily)
-SELECT c.event_type, b.borda AS borda_points,
-       c.pw - c.pl AS copeland_score,
-       c.pw AS pairwise_wins, c.pl AS pairwise_losses,
-       c.pt AS pairwise_ties,
-       c.pw = (SELECT k FROM nn) - 1 AS is_condorcet_winner,
-       (SELECT max(pw) FROM cop) = (SELECT k FROM nn) - 1
-           AS condorcet_exists
-FROM cop c JOIN borda b ON b.event_type = c.event_type
-"""
-
-
-@register("q_events_condorcet_vote", _CONDORCET_SQL)
-def q_events_condorcet_vote(spark, sf_dir):
-    """Condorcet tournament over event types with each DAY as a voter
-    (ballots = the day's strict volume ranking, deterministic
-    (count desc, type) tiebreak): full pairwise-majority duel matrix,
-    Copeland score (wins minus losses over the 4 opponents), Borda
-    points from the same ballots, and the Condorcet-winner test — a
-    type that beats every other head-to-head — with its existence
-    flagged corpus-wide (Condorcet's paradox is the case where the
-    flag is FALSE while Copeland still ranks). The social-choice
-    complement of the Kendall-W concordance (are the days consistent?)
-    and the Banzhaf power index (who controls coalitions?): this row
-    asks who WINS the election those ballots define. Exact integers
-    throughout; one day-ranking window + one pairwise self-join over
-    O(days * types^2) rows."""
-    e = _t(spark, sf_dir, "events")
-    daily = (e.groupBy(F.col("ts").cast("date").alias("day"),
-                       "event_type")
-             .agg(F.count("*").cast("long").alias("c")))
-    wd = Window.partitionBy("day")
-    ranked = daily.select(
-        "day", "event_type",
-        F.row_number().over(wd.orderBy(F.col("c").desc(),
-                                       "event_type"))
-        .cast("long").alias("rk"),
-        F.count(F.lit(1)).over(wd).cast("long").alias("nt"))
-    a, b = ranked.alias("a"), ranked.alias("b")
-    pair = (a.join(b, (F.col("a.day") == F.col("b.day"))
-                   & (F.col("a.event_type") != F.col("b.event_type")))
-            .groupBy(F.col("a.event_type").alias("x"),
-                     F.col("b.event_type").alias("y"))
-            .agg(F.sum(F.when(F.col("a.rk") < F.col("b.rk"), 1)
-                       .otherwise(0)).cast("long").alias("wins")))
-    duel = (pair.alias("p")
-            .join(pair.alias("q"),
-                  (F.col("q.x") == F.col("p.y"))
-                  & (F.col("q.y") == F.col("p.x")))
-            .select(F.col("p.x").alias("x"), F.col("p.y").alias("y"),
-                    F.col("p.wins").alias("wins"),
-                    F.col("q.wins").alias("losses")))
-    cop = (duel.groupBy(F.col("x").alias("event_type"))
-           .agg(F.sum(F.when(F.col("wins") > F.col("losses"), 1)
-                      .otherwise(0)).cast("long").alias("pw"),
-                F.sum(F.when(F.col("wins") < F.col("losses"), 1)
-                      .otherwise(0)).cast("long").alias("pl"),
-                F.sum(F.when(F.col("wins") == F.col("losses"), 1)
-                      .otherwise(0)).cast("long").alias("pt")))
-    borda = (ranked.groupBy("event_type")
-             .agg(F.sum(F.col("nt") - F.col("rk")).cast("long")
-                  .alias("borda")))
-    k = daily.select("event_type").distinct().count()
-    maxpw = int(cop.agg(F.max("pw")).collect()[0][0])
-    return (cop.join(borda, "event_type")
-            .select("event_type",
-                    F.col("borda").alias("borda_points"),
-                    (F.col("pw") - F.col("pl"))
-                    .alias("copeland_score"),
-                    F.col("pw").alias("pairwise_wins"),
-                    F.col("pl").alias("pairwise_losses"),
-                    F.col("pt").alias("pairwise_ties"),
-                    (F.col("pw") == k - 1)
-                    .alias("is_condorcet_winner"),
-                    F.lit(maxpw == k - 1).alias("condorcet_exists")))
-
-
-def _puny_fixture_sql(n: int = 24, seed: int = 42) -> str:
-    """Oracle for the punycode decode: fixture (label_id, encoded,
-    stdlib_md5) VALUES feed the SAME bootstring state machine as a
-    scalar recursion — one extended character per step, the bias
-    adaptation cascade unrolled four levels in chained LATERALs. A
-    wrong threshold clamp, a 37-for-36 slip in adapt, or an
-    off-by-one insert position decodes a different string and flips
-    both the md5 and the stdlib-match flag."""
-    from knowledge_extraction_pipeline_spark.functions.punycode import (
-        puny_labels,
-    )
-    vals = ", ".join(f"({lid}, '{enc}', '{md5}')"
-                     for lid, enc, _, md5 in puny_labels(n, seed))
-    return """
-WITH RECURSIVE fx(lbl, enc, want_md5) AS (
-  SELECT * FROM (VALUES {vals}) v(lbl, enc, want_md5)
-), sp AS (
-  SELECT lbl, enc, want_md5,
-         CASE WHEN strpos(enc, '-') > 0
-              THEN len(enc) - strpos(reverse(enc), '-') + 1
-              ELSE 0 END AS cut
-  FROM fx
-), parts AS (
-  SELECT lbl, enc, want_md5,
-         CASE WHEN cut > 0 THEN substr(enc, 1, cut - 1) ELSE '' END
-             AS basic,
-         CASE WHEN cut > 0 THEN substr(enc, cut + 1) ELSE enc END
-             AS ext
-  FROM sp
-), ch0 AS (
-  SELECT lbl, ext, unnest(range(1, len(ext) + 1)) AS ii FROM parts
-), ch AS (
-  SELECT lbl, CAST(ii AS BIGINT) AS idx,
-         substr(ext, CAST(ii AS INTEGER), 1) AS c
-  FROM ch0
-), st AS (
-  SELECT lbl, CAST(0 AS BIGINT) AS step, CAST(128 AS BIGINT) AS n,
-         CAST(0 AS BIGINT) AS i, CAST(0 AS BIGINT) AS oldi,
-         CAST(72 AS BIGINT) AS bias, CAST(1 AS BIGINT) AS w,
-         CAST(36 AS BIGINT) AS k, basic AS out,
-         CAST(0 AS BIGINT) AS groups
-  FROM parts
-  UNION ALL
-  SELECT s.lbl, s.step + 1,
-         CASE WHEN c2.fin THEN s.n + c1.i2 // c2.L ELSE s.n END,
-         CASE WHEN c2.fin THEN c1.i2 % c2.L + 1 ELSE c1.i2 END,
-         CASE WHEN c2.fin THEN c1.i2 % c2.L + 1 ELSE s.oldi END,
-         CASE WHEN c2.fin THEN a5.bias2 ELSE s.bias END,
-         CASE WHEN c2.fin THEN 1 ELSE s.w * (36 - c1.t) END,
-         CASE WHEN c2.fin THEN 36 ELSE s.k + 36 END,
-         CASE WHEN c2.fin
-         THEN substr(s.out, 1, CAST(c1.i2 % c2.L AS INTEGER))
-              || chr(CAST(s.n + c1.i2 // c2.L AS INTEGER))
-              || substr(s.out, CAST(c1.i2 % c2.L AS INTEGER) + 1)
-         ELSE s.out END,
-         CASE WHEN c2.fin THEN s.groups + 1 ELSE s.groups END
-  FROM st s
-  JOIN ch ON ch.lbl = s.lbl AND ch.idx = s.step + 1
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN ch.c >= 'a' THEN ord(ch.c) - 97
-           ELSE ord(ch.c) - 22 END AS digit) dg
-  CROSS JOIN LATERAL (
-    SELECT s.i + dg.digit * s.w AS i2,
-           CASE WHEN s.k <= s.bias THEN 1
-                WHEN s.k >= s.bias + 26 THEN 26
-                ELSE s.k - s.bias END AS t) c1
-  CROSS JOIN LATERAL (
-    SELECT dg.digit < c1.t AS fin,
-           CAST(len(s.out) + 1 AS BIGINT) AS L) c2
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN s.groups = 0 THEN (c1.i2 - s.oldi) // 700
-           ELSE (c1.i2 - s.oldi) // 2 END AS d0) a0
-  CROSS JOIN LATERAL (SELECT a0.d0 + a0.d0 // c2.L AS d1) a1
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN a1.d1 > 455 THEN a1.d1 // 35 ELSE a1.d1 END
-               AS d2,
-           CASE WHEN a1.d1 > 455 THEN 36 ELSE 0 END AS k2) a2
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN a2.d2 > 455 THEN a2.d2 // 35 ELSE a2.d2 END
-               AS d3,
-           a2.k2 + CASE WHEN a2.d2 > 455 THEN 36 ELSE 0 END AS k3) a3
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN a3.d3 > 455 THEN a3.d3 // 35 ELSE a3.d3 END
-               AS d4,
-           a3.k3 + CASE WHEN a3.d3 > 455 THEN 36 ELSE 0 END AS k4) a4
-  CROSS JOIN LATERAL (
-    SELECT a4.k4 + 36 * a4.d4 // (a4.d4 + 38) AS bias2) a5
-), fin2 AS (
-  SELECT s.lbl, s.out, s.groups
-  FROM st s JOIN parts p ON p.lbl = s.lbl
-  WHERE s.step = len(p.ext)
-)
-SELECT f.lbl AS label_id, p.enc AS encoded,
-       CAST(len(p.basic) AS BIGINT) AS n_basic,
-       CAST(f.groups AS BIGINT) AS n_inserted,
-       CAST(len(f.out) AS BIGINT) AS n_codepoints,
-       md5(f.out) AS decoded_md5,
-       md5(f.out) = p.want_md5 AS matches_stdlib
-FROM fin2 f JOIN parts p ON p.lbl = f.lbl
-""".replace("{vals}", vals)
-
-
-@register("text_punycode_decode", _puny_fixture_sql())
-def text_punycode_decode(spark, sf_dir):
-    """Punycode / Bootstring DECODING (RFC 3492 — the IDNA wire
-    format) of 24 fixture labels spanning Greek, Cyrillic and CJK
-    with pure-ASCII and hyphen-bearing originals: basic code points
-    before the LAST hyphen, then the generalized variable-length
-    base-36 integers replayed one character per step — threshold
-    t = max(1, min(26, k - bias)), a code point completing on each
-    undershooting digit, inserted at the position the accumulated
-    delta encodes, and the bias re-adapting through the RFC's damped
-    division cascade (the 36-not-37 numerator being the classic
-    implementation slip). Python's stdlib punycode codec is the
-    INDEPENDENT oracle: its md5 of the original is pinned per label
-    at fixture build and the decoders' match flag must come out TRUE
-    — neither engine calls it on the decode path. Engine: hand-rolled
-    driver state machine (functions/punycode.py); oracle: the
-    identical scalar recursion with the adapt cascade unrolled across
-    chained LATERALs."""
-    from .functions.punycode import bootstring_decode, puny_labels
-    import hashlib as _h
-    out = []
-    for lid, enc, _, want in puny_labels(24):
-        cut = enc.rindex("-") if "-" in enc else -1
-        basic = enc[:cut] if cut >= 0 else ""
-        dec = bootstring_decode(enc)
-        md5 = _h.md5(dec.encode("utf-8")).hexdigest()
-        out.append((lid, enc, len(basic), len(dec) - len(basic),
-                    len(dec), md5, md5 == want))
-    return spark.createDataFrame(
-        out, "label_id long, encoded string, n_basic long,"
-             " n_inserted long, n_codepoints long, decoded_md5 string,"
-             " matches_stdlib boolean")
-
-
-def _ebml_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the EBML walk: re-derived from the pure
-    ebml_file_spec formulas — a vint width re-derived from the value
-    instead of the leading zeros, a missed wide-size, or a marker bit
-    left on a size flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources import ebmlfile as E
-    rows = []
-    for i in range(n):
-        sp = E.ebml_file_spec(i, seed)
-        wb = sp["width_bump"]
-        n_elem = 14 + sp["n_void"]
-        n_wide = ((1 if wb % 2 else 0) + (1 if wb else 0)
-                  + (1 if wb % 3 else 0) + 1)
-        ids = [E.EBML_HDR, E.VERSION, E.READ_VERSION, E.MAX_ID_LEN,
-               E.MAX_SIZE_LEN, E.DOCTYPE, E.DT_VERSION,
-               E.DT_READ_VERSION, E.SEGMENT, E.INFO,
-               E.TIMECODE_SCALE, E.TITLE, E.MUXING_APP,
-               E.WRITING_APP] + [E.VOID] * sp["n_void"]
-        xor = 0
-        for eid in ids:
-            xor ^= eid
-        strs = "|".join([sp["doctype"], sp["title"], sp["muxing"],
-                         sp["writing"]])
-        rows.append(
-            f"({i}, {n_elem}, 3, '{sp['doctype']}',"
-            f" {sp['dt_version']}, {sp['timecode_scale']}, {n_wide},"
-            f" {sp['n_void']}, {xor},"
-            f" '{_h.md5(strs.encode()).hexdigest()}')")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id,"
-        " CAST(n_elements AS INTEGER) AS n_elements,"
-        " CAST(max_depth AS INTEGER) AS max_depth, doctype,"
-        " CAST(doctype_version AS BIGINT) AS doctype_version,"
-        " CAST(timecode_scale AS BIGINT) AS timecode_scale,"
-        " CAST(n_wide_sizes AS INTEGER) AS n_wide_sizes,"
-        " CAST(n_unknown_leaves AS INTEGER) AS n_unknown_leaves,"
-        " CAST(id_xor AS BIGINT) AS id_xor, strings_md5"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, n_elements, max_depth, doctype, doctype_version,"
-        " timecode_scale, n_wide_sizes, n_unknown_leaves, id_xor,"
-        " strings_md5)")
-
-
-@register("multimodal_ebml_header", _ebml_fixture_sql())
-def multimodal_ebml_header(spark, sf_dir):
-    """EBML/Matroska envelope manifest via the HAND-ROLLED vint walk
-    (sources/ebmlfile.ebml_manifest, RFC 8794): widths decoded from
-    the FIRST BYTE'S LEADING ZEROS — never re-derived from values,
-    because size vints are legally wider than minimal and the
-    fixtures write the same sizes at 1..4-byte widths on purpose,
-    with the non-minimal count pinned — element IDs kept with their
-    marker bit while sizes strip it, the all-ones unknown-size
-    sentinel and all-zero reserved first bytes and >4-byte IDs
-    honestly refused, master elements (EBML header / Segment / Info)
-    descended with overrun checks, known uint/string leaves decoded,
-    unknown leaves (planted Voids) skipped by declared size and
-    counted. The third video-container discipline beside the MP4 box
-    and AVI RIFF walks. One mapInPandas, fully distributed."""
-    from .sources.ebmlfile import ebml_manifest, synthetic_ebmls
-    return ebml_manifest(synthetic_ebmls(spark, 30))
-
-
-_SECRETARY_SQL = """
-WITH cand AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CAST(row_number() OVER (PARTITION BY CAST(ts AS DATE)
-                                 ORDER BY ts, event_id) AS BIGINT)
-             AS idx,
-         CAST(round(value * 100) AS BIGINT) AS v
-  FROM events
-), dims AS (
-  SELECT day, max(idx) AS n, max(idx) * 368 // 1000 AS r,
-         max(v) AS day_max
-  FROM cand GROUP BY day
-), bench AS (
-  SELECT c.day, max(c.v) AS benchmark
-  FROM cand c JOIN dims d ON d.day = c.day
-  WHERE c.idx <= d.r GROUP BY c.day
-), qual AS (
-  SELECT c.day, min(c.idx) AS pick_idx
-  FROM cand c JOIN dims d ON d.day = c.day
-  LEFT JOIN bench b ON b.day = c.day
-  WHERE c.idx > d.r AND (d.r = 0 OR c.v > b.benchmark)
-  GROUP BY c.day
-), res AS (
-  SELECT d.day, d.n, d.r, b.benchmark,
-         coalesce(q.pick_idx, d.n) AS picked_idx, d.day_max
-  FROM dims d
-  LEFT JOIN bench b ON b.day = d.day
-  LEFT JOIN qual q ON q.day = d.day
-), fin AS (
-  SELECT r2.*, c.v AS picked_v, c.v = r2.day_max AS success
-  FROM res r2 JOIN cand c
-    ON c.day = r2.day AND c.idx = r2.picked_idx
-)
-SELECT day, n AS n_candidates, r AS observe_len,
-       benchmark AS benchmark_e2, picked_idx,
-       picked_v AS picked_value_e2, day_max AS day_max_e2, success,
-       CAST((SELECT count(*) FILTER (WHERE success) FROM fin)
-            * 1000000 // (SELECT count(*) FROM fin) AS BIGINT)
-           AS success_rate_e6
-FROM fin
-"""
-
-
-@register("q_events_secretary_rule", _SECRETARY_SQL)
-def q_events_secretary_rule(spark, sf_dir):
-    """The secretary problem's 1/e stopping rule REPLAYED against
-    every day of real traffic (candidates = the day's events in
-    stable arrival order, quality = e2-integer value): observe the
-    first floor(0.368·n) candidates without committing, then accept
-    the FIRST one strictly beating the observation-phase maximum,
-    falling back to the last candidate if none does — the optimal-
-    stopping policy whose ~37% success probability at picking the
-    true best is one of the great constants of decision theory, here
-    MEASURED: per-day benchmark, pick index, picked value, day
-    maximum and success verdict are all emitted beside the corpus
-    success rate. Zero recursion — the sequential-looking policy
-    collapses to one rank window plus min-over-qualifying-index
-    aggregates, the 10^9-day shape. The online-decision sibling of
-    the interval-scheduling and token-bucket replays."""
-    cand = _t(spark, sf_dir, "events").select(
-        F.col("ts").cast("date").alias("day"),
-        F.row_number().over(
-            Window.partitionBy(F.col("ts").cast("date"))
-            .orderBy("ts", "event_id")).cast("long").alias("idx"),
-        F.round(F.col("value") * 100).cast("long").alias("v"))
-    dims = cand.groupBy("day").agg(
-        F.max("idx").alias("n"),
-        F.expr("max(idx) * 368 div 1000").alias("r"),
-        F.max("v").alias("day_max"))
-    bench = (cand.join(dims, "day")
-             .filter(F.col("idx") <= F.col("r"))
-             .groupBy("day").agg(F.max("v").alias("benchmark")))
-    qual = (cand.join(dims, "day")
-            .join(bench, "day", "left")
-            .filter((F.col("idx") > F.col("r"))
-                    & ((F.col("r") == 0)
-                       | (F.col("v") > F.col("benchmark"))))
-            .groupBy("day").agg(F.min("idx").alias("pick_idx")))
-    res = (dims.join(bench, "day", "left")
-           .join(qual, "day", "left")
-           .withColumn("picked_idx",
-                       F.coalesce("pick_idx", F.col("n"))))
-    fin = (res.join(cand.withColumnRenamed("v", "picked_v")
-                    .withColumnRenamed("idx", "pidx"), ["day"])
-           .filter(F.col("pidx") == F.col("picked_idx"))
-           .withColumn("success",
-                       F.col("picked_v") == F.col("day_max")))
-    rate = fin.agg(
-        (F.sum(F.col("success").cast("long")) * 1000000
-         / F.count("*")).cast("long").alias("success_rate_e6"))
-    return (fin.crossJoin(F.broadcast(rate))
-            .select("day", F.col("n").alias("n_candidates"),
-                    F.col("r").alias("observe_len"),
-                    F.col("benchmark").alias("benchmark_e2"),
-                    "picked_idx",
-                    F.col("picked_v").alias("picked_value_e2"),
-                    F.col("day_max").alias("day_max_e2"), "success",
-                    "success_rate_e6"))
-
-
-_BANDIT_SQL = """
-WITH RECURSIVE ev AS (
-  SELECT CAST(row_number() OVER (ORDER BY ts, event_id) AS BIGINT)
-             AS rn,
-         event_type,
-         CASE WHEN CAST(round(value * 100) AS BIGINT) > 10000
-              THEN 1 ELSE 0 END AS reward
-  FROM (SELECT * FROM events ORDER BY ts, event_id LIMIT 600)
-), arms AS (
-  SELECT t, CAST(row_number() OVER (ORDER BY t) AS INTEGER) AS ai
-  FROM (SELECT DISTINCT event_type AS t FROM ev) q
-), ev2 AS (
-  SELECT ev.rn, a.ai, ev.reward,
-         CAST(CAST(concat('0x', substr(md5(concat('bandit:',
-              CAST(ev.rn AS VARCHAR))), 1, 16)) AS UBIGINT) % 10
-              AS BIGINT) AS expl,
-         CAST(CAST(CAST(concat('0x', substr(md5(concat('pick:',
-              CAST(ev.rn AS VARCHAR))), 1, 16)) AS UBIGINT) % 5
-              AS BIGINT) + 1 AS INTEGER) AS rand_arm
-  FROM ev JOIN arms a ON a.t = ev.event_type
-), na AS (SELECT CAST(count(*) AS INTEGER) AS k FROM arms),
-st AS (
-  SELECT CAST(0 AS BIGINT) AS rn,
-         list_transform(range(1, na.k + 1),
-                        i -> CAST(0 AS BIGINT)) AS n,
-         list_transform(range(1, na.k + 1),
-                        i -> CAST(0 AS BIGINT)) AS r,
-         CAST(0 AS BIGINT) AS matches, CAST(0 AS BIGINT) AS rewards,
-         0 AS played, 0 AS chosen
-  FROM na
-  UNION ALL
-  SELECT e.rn,
-         CASE WHEN ch.c = e.ai
-         THEN list_transform(range(1, len(s.n) + 1), i ->
-                CASE WHEN i = e.ai THEN s.n[i] + 1 ELSE s.n[i] END)
-         ELSE s.n END,
-         CASE WHEN ch.c = e.ai
-         THEN list_transform(range(1, len(s.r) + 1), i ->
-                CASE WHEN i = e.ai THEN s.r[i] + e.reward
-                ELSE s.r[i] END)
-         ELSE s.r END,
-         s.matches + CASE WHEN ch.c = e.ai THEN 1 ELSE 0 END,
-         s.rewards + CASE WHEN ch.c = e.ai THEN e.reward ELSE 0 END,
-         CASE WHEN ch.c = e.ai THEN 1 ELSE 0 END,
-         ch.c
-  FROM st s
-  JOIN ev2 e ON e.rn = s.rn + 1
-  CROSS JOIN LATERAL (
-    SELECT CASE
-      WHEN e.expl = 0 THEN e.rand_arm
-      WHEN list_position(s.n, 0) > 0 THEN list_position(s.n, 0)
-      ELSE list_position(
-        list_transform(range(1, len(s.n) + 1),
-                       i -> s.r[i] * 1000000000 // s.n[i]),
-        list_max(list_transform(range(1, len(s.n) + 1),
-                       i -> s.r[i] * 1000000000 // s.n[i])))
-    END AS c) ch
-)
-SELECT s.rn AS step, a.t AS chosen_arm, s.matches, s.rewards,
-       s.n[s.chosen] AS arm_plays, s.r[s.chosen] AS arm_rewards,
-       CAST(CASE WHEN s.matches > 0
-            THEN s.rewards * 1000000 // s.matches END AS BIGINT)
-           AS replay_ctr_e6
-FROM st s JOIN arms a ON a.ai = s.chosen
-WHERE s.played = 1
-"""
-
-
-@register("q_events_bandit_replay", _BANDIT_SQL)
-def q_events_bandit_replay(spark, sf_dir):
-    """Epsilon-greedy bandit POLICY REPLAY evaluated offline by the
-    replayer method (Li et al. 2011 — the standard unbiased way to
-    test a bandit on logged data): walk the first 600 events in
-    arrival order; at each step the policy picks an arm (10%
-    md5-deterministic exploration, otherwise greedy on e9-floored
-    empirical means with first-unplayed-arm priority and
-    smallest-index tiebreaks — comparisons never touch floats); the
-    step COUNTS only when the logged event's type equals the chosen
-    arm, whereupon the arm's counters absorb the logged reward
-    (value > 100 as conversion). Every matched step is emitted with
-    the running match count, cumulative replay reward and CTR — one
-    slipped counter shifts every later greedy choice and flips the
-    hash. The decision-policy sibling of the secretary and
-    token-bucket replays. Engine: driver fold (sequential by
-    definition); oracle: identical list-carrying recursion with the
-    chooser in one LATERAL."""
-    ev = (_t(spark, sf_dir, "events").orderBy("ts", "event_id")
-          .limit(600)
-          .select("event_type",
-                  (F.round(F.col("value") * 100).cast("long") > 10000)
-                  .cast("long").alias("reward")).collect())
-    arms = sorted({r["event_type"] for r in ev})
-    k = len(arms)
-    ai = {t: ix for ix, t in enumerate(arms)}
-    import hashlib as _h
-
-    def _mod(tag, rn, m):
-        return int(_h.md5(f"{tag}:{rn}".encode()).hexdigest()[:16],
-                   16) % m
-
-    n = [0] * k
-    r = [0] * k
-    matches = rewards = 0
-    out = []
-    for rn, row in enumerate(ev, start=1):
-        if _mod("bandit", rn, 10) == 0:
-            c = _mod("pick", rn, 5)
-        elif 0 in n:
-            c = n.index(0)
-        else:
-            means = [r[i] * 10 ** 9 // n[i] for i in range(k)]
-            c = means.index(max(means))
-        logged = ai[row["event_type"]]
-        if c == logged:
-            n[c] += 1
-            r[c] += row["reward"]
-            matches += 1
-            rewards += row["reward"]
-            out.append((rn, arms[c], matches, rewards, n[c], r[c],
-                        rewards * 1000000 // matches))
-    return spark.createDataFrame(
-        out, "step long, chosen_arm string, matches long,"
-             " rewards long, arm_plays long, arm_rewards long,"
-             " replay_ctr_e6 long")
-
-
-_COMPRISK_SQL = """
-WITH RECURSIVE e AS (
-  SELECT user_id, event_type, event_id,
-         epoch_us(CAST(ts AS TIMESTAMP)) AS us
-  FROM events
-), g AS (
-  SELECT user_id, event_type, event_id, us,
-         CASE WHEN lag(us) OVER (PARTITION BY user_id ORDER BY us,
-                                 event_id) IS NULL
-                   OR us - lag(us) OVER (PARTITION BY user_id
-                                         ORDER BY us, event_id)
-                      > 1800000000
-              THEN 1 ELSE 0 END AS brk
-  FROM e
-), s AS (
-  SELECT *, sum(brk) OVER (PARTITION BY user_id
-                           ORDER BY us, event_id) AS sid
-  FROM g
-), s2 AS (
-  SELECT *, row_number() OVER (PARTITION BY user_id, sid
-                               ORDER BY us DESC, event_id DESC)
-             AS rk
-  FROM s
-), sess AS (
-  SELECT user_id, sid, min(us) AS t0, max(us) AS t1,
-         max(CASE WHEN rk = 1 THEN event_type END) AS last_type
-  FROM s2 GROUP BY 1, 2
-), b AS (SELECT max(us) AS mx FROM e),
-dur AS (
-  SELECT (t1 - t0) // 60000000 AS t, last_type,
-         (t1 > (SELECT mx FROM b) - 1800000000) AS censored
-  FROM sess
-), ev AS (
-  SELECT t, CAST(count(*) AS BIGINT) AS a,
-         CAST(count(*) FILTER (WHERE NOT censored
-              AND last_type = 'click') AS BIGINT) AS d1,
-         CAST(count(*) FILTER (WHERE NOT censored
-              AND last_type = 'error') AS BIGINT) AS d2,
-         CAST(count(*) FILTER (WHERE NOT censored
-              AND last_type = 'purchase') AS BIGINT) AS d3,
-         CAST(count(*) FILTER (WHERE NOT censored
-              AND last_type = 'signup') AS BIGINT) AS d4,
-         CAST(count(*) FILTER (WHERE NOT censored
-              AND last_type = 'view') AS BIGINT) AS d5
-  FROM dur GROUP BY t
-), risk AS (
-  SELECT t, d1, d2, d3, d4, d5, d1 + d2 + d3 + d4 + d5 AS d,
-         sum(a) OVER (ORDER BY t DESC) AS n,
-         CAST(row_number() OVER (ORDER BY t) AS BIGINT) AS ti
-  FROM ev
-), nt AS (SELECT CAST(count(*) AS BIGINT) AS m FROM risk),
-st AS (
-  SELECT CAST(0 AS BIGINT) AS ti, CAST(1000000000 AS BIGINT) AS surv,
-         CAST(0 AS BIGINT) AS c1, CAST(0 AS BIGINT) AS c2,
-         CAST(0 AS BIGINT) AS c3, CAST(0 AS BIGINT) AS c4,
-         CAST(0 AS BIGINT) AS c5
-  UNION ALL
-  SELECT r.ti,
-         s.surv * (r.n - r.d) // r.n,
-         s.c1 + s.surv * r.d1 // r.n,
-         s.c2 + s.surv * r.d2 // r.n,
-         s.c3 + s.surv * r.d3 // r.n,
-         s.c4 + s.surv * r.d4 // r.n,
-         s.c5 + s.surv * r.d5 // r.n
-  FROM st s JOIN risk r ON r.ti = s.ti + 1
-)
-SELECT r.t AS t_minutes, CAST(r.n AS BIGINT) AS n_risk,
-       r.d AS d_total, st.surv AS surv_e9,
-       st.c1 AS cif_click_e9, st.c2 AS cif_error_e9,
-       st.c3 AS cif_purchase_e9, st.c4 AS cif_signup_e9,
-       st.c5 AS cif_view_e9,
-       st.c1 + st.c2 + st.c3 + st.c4 + st.c5 AS cif_total_e9,
-       1000000000 - st.surv
-           - (st.c1 + st.c2 + st.c3 + st.c4 + st.c5)
-           AS floor_drift_e9
-FROM st JOIN risk r ON r.ti = st.ti WHERE st.ti >= 1
-"""
-
-
-@register("q_events_competing_risks", _COMPRISK_SQL)
-def q_events_competing_risks(spark, sf_dir):
-    """Aalen-Johansen cumulative incidence under COMPETING RISKS over
-    the Kaplan-Meier sessions: each completed session 'fails' by the
-    type of its last event (five competing causes), and at each
-    distinct duration every cause's incidence grows by
-    S(t-)·d_k/n — the quantity naive per-cause 1-minus-KM curves
-    OVERSTATE by treating other causes as censoring. The all-cause
-    survival and all five CIFs are carried together through one e9
-    fixed-point recursion (identical floors in both engines), and
-    each row exposes the accounting identity 1 = S + sum(CIF) with
-    its accumulated floor drift emitted honestly as a column rather
-    than hidden by rounding. Completes the survival family:
-    KM (log-product), Nelson-Aalen (hazard), log-rank (comparison),
-    Aalen-Johansen (causes). Engine: sessionize windows + a bounded
-    driver fold over distinct durations; oracle: identical scalar
-    recursion."""
-    e = _t(spark, sf_dir, "events").select(
-        "user_id", "event_type", "event_id",
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"))
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    gap = F.col("us") - F.lag("us").over(w)
-    s = (e.withColumn("brk", F.when(F.lag("us").over(w).isNull()
-                                    | (gap > 1_800_000_000), 1)
-                      .otherwise(0))
-         .withColumn("sid", F.sum("brk").over(w)))
-    w2 = Window.partitionBy("user_id", "sid").orderBy(
-        F.col("us").desc(), F.col("event_id").desc())
-    s2 = s.withColumn("rk", F.row_number().over(w2))
-    sess = (s2.groupBy("user_id", "sid")
-            .agg(F.min("us").alias("t0"), F.max("us").alias("t1"),
-                 F.max(F.when(F.col("rk") == 1, F.col("event_type")))
-                 .alias("last_type")))
-    mx = int(e.agg(F.max("us")).collect()[0][0])
-    dur = sess.select(
-        F.expr("(t1 - t0) div 60000000").alias("t"), "last_type",
-        (F.col("t1") > mx - 1_800_000_000).alias("censored"))
-    types = ["click", "error", "purchase", "signup", "view"]
-    aggs = [F.count(F.lit(1)).cast("long").alias("a")] + [
-        F.sum(F.when(~F.col("censored")
-                     & (F.col("last_type") == t), 1).otherwise(0))
-        .cast("long").alias(f"d{i + 1}")
-        for i, t in enumerate(types)]
-    ev = dur.groupBy("t").agg(*aggs)
-    risk = ev.select(
-        "t", "d1", "d2", "d3", "d4", "d5",
-        sum([F.col(f"d{i}") for i in range(1, 6)],
-            F.lit(0)).alias("d"),
-        F.sum("a").over(Window.orderBy(F.col("t").desc())).alias("n"))
-    rows = sorted((int(r["t"]), int(r["n"]), int(r["d"]),
-                   [int(r[f"d{i}"]) for i in range(1, 6)])
-                  for r in risk.collect())
-    surv = 10 ** 9
-    cif = [0] * 5
-    out = []
-    for t, nrisk, d, dk in rows:
-        for i in range(5):
-            cif[i] += surv * dk[i] // nrisk
-        surv = surv * (nrisk - d) // nrisk
-        tot = sum(cif)
-        out.append((t, nrisk, d, surv, *cif, tot,
-                    10 ** 9 - surv - tot))
-    return spark.createDataFrame(
-        out, "t_minutes long, n_risk long, d_total long, surv_e9 long,"
-             " cif_click_e9 long, cif_error_e9 long,"
-             " cif_purchase_e9 long, cif_signup_e9 long,"
-             " cif_view_e9 long, cif_total_e9 long,"
-             " floor_drift_e9 long")
-
-
-def _sfnt_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the sfnt walk: re-derived from the pure
-    sfnt_file_spec formulas — a checksum over the unzeroed head
-    adjustment, a trusted-not-verified binary-search plan, or an
-    off-by-one in the format-4 segment rule flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.sfntfile import (
-        PROBES, sfnt_file_spec,
-    )
-    rows = []
-    for i in range(n):
-        sp = sfnt_file_spec(i, seed)
-
-        def g(c):
-            for s in sp["segs"]:
-                if s["end"] >= c:
-                    return (c - s["start"] + s["first_gid"]
-                            if s["start"] <= c else 0)
-            return 0
-
-        names = "|".join([
-            "1=" + sp["family"], "2=" + sp["style"],
-            "5=" + sp["version_str"],
-            "4=" + sp["family"] + " " + sp["style"]])
-        rows.append(
-            f"({i}, 6, TRUE, {sp['units_per_em']},"
-            f" {sp['num_glyphs']}, {len(sp['segs']) + 1}, TRUE, TRUE,"
-            f" TRUE, {sum(g(ord(c)) for c in PROBES)},"
-            f" '{_h.md5(names.encode()).hexdigest()}')")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id,"
-        " CAST(n_tables AS INTEGER) AS n_tables,"
-        " CAST(search_plan_ok AS BOOLEAN) AS search_plan_ok,"
-        " CAST(units_per_em AS INTEGER) AS units_per_em,"
-        " CAST(num_glyphs AS INTEGER) AS num_glyphs,"
-        " CAST(n_segments AS INTEGER) AS n_segments,"
-        " CAST(table_checksums_ok AS BOOLEAN) AS table_checksums_ok,"
-        " CAST(file_checksum_ok AS BOOLEAN) AS file_checksum_ok,"
-        " CAST(magic_ok AS BOOLEAN) AS magic_ok,"
-        " CAST(probe_glyph_sum AS BIGINT) AS probe_glyph_sum,"
-        " names_md5"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, n_tables, search_plan_ok, units_per_em,"
-        " num_glyphs, n_segments, table_checksums_ok,"
-        " file_checksum_ok, magic_ok, probe_glyph_sum, names_md5)")
-
-
-@register("multimodal_sfnt_tables", _sfnt_fixture_sql())
-def multimodal_sfnt_tables(spark, sf_dir):
-    """TrueType/sfnt font-container manifest via the HAND-ROLLED walk
-    (sources/sfntfile.sfnt_manifest): the offset table's binary-search
-    plan (searchRange/entrySelector/rangeShift) VERIFIED against
-    numTables instead of trusted, per-table big-endian uint32-sum
-    checksums over zero-padded bodies, the head table's circular
-    checkSumAdjustment trick verified both ways (adjustment zeroed
-    for its own table sum; whole file must sum to 0xB1B0AFBA), the
-    0x5F0F3CF5 magic, and the cmap format-4 segment walk (first
-    endCode >= c rule, idDelta mod-65536 arithmetic, mandatory 0xFFFF
-    terminator) mapping probe characters with glyph ids cross-checked
-    against maxp; UTF-16BE name records extracted. CFF ('OTTO'),
-    collections ('ttcf') and non-format-4 cmaps honestly refused.
-    Fonts are a real corpus payload (PDFs and web archives embed
-    them); one mapInPandas, fully distributed."""
-    from .sources.sfntfile import sfnt_manifest, synthetic_sfnts
-    return sfnt_manifest(synthetic_sfnts(spark, 30))
-
-
-_GTEST_SQL = """
-WITH obs AS (
-  SELECT event_type AS et,
-         CAST(isodow(CAST(ts AS TIMESTAMP)) AS BIGINT) AS dow,
-         CAST(count(*) AS BIGINT) AS o
-  FROM events GROUP BY 1, 2
-), tot AS (
-  SELECT CAST(sum(o) AS BIGINT) AS n FROM obs
-), mr AS (SELECT et, sum(o) AS rt FROM obs GROUP BY et),
-mc AS (SELECT dow, sum(o) AS ct FROM obs GROUP BY dow),
-cells AS (
-  SELECT o.et, o.dow, o.o, mr.rt, mc.ct,
-         CAST(floor(2.0 * o.o * ln(CAST(o.o AS DOUBLE)
-              * CAST((SELECT n FROM tot) AS DOUBLE)
-              / (CAST(mr.rt AS DOUBLE) * CAST(mc.ct AS DOUBLE)))
-              * 1000000000 + 0.5) AS BIGINT) AS g_term_e9
-  FROM obs o JOIN mr ON mr.et = o.et JOIN mc ON mc.dow = o.dow
-)
-SELECT et AS event_type, dow, o AS observed,
-       CAST(rt * ct * 1000000 // (SELECT n FROM tot) AS BIGINT)
-           AS expected_e6,
-       g_term_e9,
-       CAST((SELECT sum(g_term_e9) FROM cells) AS BIGINT) AS g_e9,
-       CAST((SELECT (count(DISTINCT et) - 1)
-                    * (count(DISTINCT dow) - 1) FROM obs)
-            AS BIGINT) AS dof
-FROM cells
-"""
-
-
-@register("q_events_g_test", _GTEST_SQL)
-def q_events_g_test(spark, sf_dir):
-    """G-test (log-likelihood-ratio) of independence on the event-type
-    x ISO-weekday contingency table — the information-theoretic twin
-    of the chi-square row (G = 2 sum O·ln(O·N/(R·C)) is exactly twice
-    the mutual information in nats scaled by N, and is additive under
-    table partitions where chi-square is not): counts are exact
-    integers, each cell's single ln runs on the identical exact-
-    integer ratio in both engines and is floored ONCE to e9 (the
-    Kaplan-Meier float discipline), then integer-summed, so libm
-    accumulation order cannot drift. Every cell is emitted with its
-    e6 expected count and e9 G-term beside the table-wide G and
-    degrees of freedom. One histogram aggregate + two marginal
-    joins."""
-    obs = (_t(spark, sf_dir, "events")
-           .groupBy(F.col("event_type").alias("et"),
-                    (F.weekday("ts") + 1).cast("long").alias("dow"))
-           .agg(F.count("*").cast("long").alias("o")))
-    n = int(obs.agg(F.sum("o")).collect()[0][0])
-    mr = obs.groupBy("et").agg(F.sum("o").alias("rt"))
-    mc = obs.groupBy("dow").agg(F.sum("o").alias("ct"))
-    cells = (obs.join(mr, "et").join(mc, "dow")
-             .withColumn("g_term_e9", F.expr(
-                 f"CAST(floor(2.0 * o * ln(CAST(o AS DOUBLE)"
-                 f" * CAST({n} AS DOUBLE)"
-                 f" / (CAST(rt AS DOUBLE) * CAST(ct AS DOUBLE)))"
-                 f" * 1000000000 + 0.5) AS BIGINT)")))
-    g = int(cells.agg(F.sum("g_term_e9")).collect()[0][0])
-    dof = int(cells.agg(
-        ((F.countDistinct("et") - 1)
-         * (F.countDistinct("dow") - 1)).alias("d"))
-        .collect()[0]["d"])
-    return cells.select(
-        F.col("et").alias("event_type"), "dow",
-        F.col("o").alias("observed"),
-        F.expr(f"CAST(rt * ct * 1000000 div {n} AS BIGINT)")
-        .alias("expected_e6"),
-        "g_term_e9", F.lit(g).alias("g_e9"),
-        F.lit(dof).cast("long").alias("dof"))
-
-
-def _shp_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the shapefile walk: re-derived from the pure
-    shp_file_spec formulas — a single-endian read of the mixed-order
-    header, a trusted (unverified) bounding box, or a words-vs-bytes
-    length slip flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.shapefile import (
-        shp_file_spec,
-    )
-    rows = []
-    for i in range(n):
-        recs = shp_file_spec(i, seed)
-        allp = [p for r in recs for p in r.get("pts", [])]
-        stream = "|".join("%d,%d" % (x, y) for r in recs
-                          for x, y in r.get("pts", []))
-        rows.append(
-            f"({i}, {len(recs)}, {len(allp)},"
-            f" {sum(1 for r in recs if r['type'] == 3)},"
-            f" {sum(1 for r in recs if r['type'] == 5)},"
-            f" {sum(1 for r in recs if r['type'] == 0)},"
-            f" TRUE, TRUE, TRUE,"
-            f" {sum(x + y for x, y in allp)},"
-            f" '{_h.md5(stream.encode()).hexdigest()}')")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id,"
-        " CAST(n_records AS INTEGER) AS n_records,"
-        " CAST(n_points_total AS INTEGER) AS n_points_total,"
-        " CAST(n_polylines AS INTEGER) AS n_polylines,"
-        " CAST(n_polygons AS INTEGER) AS n_polygons,"
-        " CAST(n_null AS INTEGER) AS n_null,"
-        " CAST(file_bbox_ok AS BOOLEAN) AS file_bbox_ok,"
-        " CAST(record_bboxes_ok AS BOOLEAN) AS record_bboxes_ok,"
-        " CAST(file_len_ok AS BOOLEAN) AS file_len_ok,"
-        " CAST(coord_sum AS BIGINT) AS coord_sum, coords_md5"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, n_records, n_points_total, n_polylines,"
-        " n_polygons, n_null, file_bbox_ok, record_bboxes_ok,"
-        " file_len_ok, coord_sum, coords_md5)")
-
-
-@register("multimodal_shapefile_records", _shp_fixture_sql())
-def multimodal_shapefile_records(spark, sf_dir):
-    """ESRI shapefile manifest via the HAND-ROLLED mixed-endian walk
-    (sources/shapefile.shp_manifest): the 9994 file code, record
-    headers and the file length (in 16-BIT WORDS) are big-endian
-    while version, shape types and all geometry are little-endian —
-    the documented trap a single-endian reader turns into garbage
-    lengths; Point / PolyLine / Polygon / Null records walked with
-    part arrays, bounding boxes VERIFIED at both levels against
-    actual coordinate extremes (integer-valued doubles, exact in
-    IEEE 754), sequential record numbering enforced, measured/Z shape
-    types honestly refused. The ingestion side of the engine's
-    geospatial surface, beside the geohash and Hilbert rows. One
-    mapInPandas, fully distributed."""
-    from .sources.shapefile import shp_manifest, synthetic_shps
-    return shp_manifest(synthetic_shps(spark, 30))
-
-
-_MOOD_SQL = """
-WITH RECURSIVE v AS (
-  SELECT event_type AS et, CAST(round(value * 100) AS BIGINT) AS v
-  FROM events WHERE event_type IN ('click', 'purchase')
-), med AS (
-  SELECT v AS m FROM (
-    SELECT v, row_number() OVER (ORDER BY v, et) AS rn,
-           count(*) OVER () AS n
-    FROM v) q
-  WHERE rn = (n + 1) // 2
-), tab AS (
-  SELECT
-    CAST(count(*) FILTER (WHERE et = 'click'
-         AND v > (SELECT m FROM med)) AS BIGINT) AS a,
-    CAST(count(*) FILTER (WHERE et = 'click'
-         AND v < (SELECT m FROM med)) AS BIGINT) AS b,
-    CAST(count(*) FILTER (WHERE et = 'purchase'
-         AND v > (SELECT m FROM med)) AS BIGINT) AS c,
-    CAST(count(*) FILTER (WHERE et = 'purchase'
-         AND v < (SELECT m FROM med)) AS BIGINT) AS d,
-    CAST(count(*) FILTER (WHERE v = (SELECT m FROM med))
-         AS BIGINT) AS at_median
-  FROM v
-), dims AS (
-  SELECT a, b, c, d, at_median, a + b AS r1, c + d AS r2,
-         a + c AS c1, a + b + c + d AS n
-  FROM tab
-)
-SELECT dims.a AS click_above, dims.b AS click_below,
-       dims.c AS purchase_above, dims.d AS purchase_below,
-       dims.at_median,
-       (SELECT m FROM med) AS grand_median_e2,
-       CAST(CAST(dims.a * dims.d - dims.b * dims.c AS HUGEINT)
-            * (dims.a * dims.d - dims.b * dims.c) * dims.n
-            * 1000000
-            // (CAST(dims.r1 AS HUGEINT) * dims.r2 * dims.c1
-                * (dims.b + dims.d))
-            AS BIGINT) AS chi2_e6
-FROM dims
-"""
-
-
-@register("q_events_mood_median", _MOOD_SQL)
-def q_events_mood_median(spark, sf_dir):
-    """Mood's median test between the click and purchase value
-    distributions — the blunt-but-assumption-free location test: the
-    grand median of the POOLED sample is picked by exact integer rank
-    (deterministic (value, type) tiebreak), each group is split into
-    strictly-above / strictly-below counts with the at-median mass
-    dropped by the classic convention (and emitted, so the dropped
-    mass is auditable), and the 2x2 chi-square statistic comes out of
-    pure integer cross-products with one e6 floor — the median
-    complement of Mann-Whitney (mean ranks) and Cliff's delta
-    (dominance). One rank window + one conditional aggregate."""
-    v = (_t(spark, sf_dir, "events")
-         .filter(F.col("event_type").isin("click", "purchase"))
-         .select(F.col("event_type").alias("et"),
-                 F.round(F.col("value") * 100).cast("long")
-                 .alias("v")))
-    n_all = v.count()
-    med = int(v.select("v", F.row_number().over(
-        Window.orderBy("v", "et")).alias("rn"))
-        .filter(F.col("rn") == (n_all + 1) // 2)
-        .collect()[0]["v"])
-    tab = v.agg(
-        F.sum(F.when((F.col("et") == "click") & (F.col("v") > med),
-                     1).otherwise(0)).cast("long").alias("a"),
-        F.sum(F.when((F.col("et") == "click") & (F.col("v") < med),
-                     1).otherwise(0)).cast("long").alias("b"),
-        F.sum(F.when((F.col("et") == "purchase") & (F.col("v") > med),
-                     1).otherwise(0)).cast("long").alias("c"),
-        F.sum(F.when((F.col("et") == "purchase") & (F.col("v") < med),
-                     1).otherwise(0)).cast("long").alias("d"),
-        F.sum(F.when(F.col("v") == med, 1).otherwise(0)).cast("long")
-        .alias("at_median"))
-    r = tab.collect()[0]
-    a, b, c, d = (int(r["a"]), int(r["b"]), int(r["c"]), int(r["d"]))
-    n = a + b + c + d
-    chi2 = ((a * d - b * c) ** 2 * n * 1000000
-            // ((a + b) * (c + d) * (a + c) * (b + d)))
-    return spark.createDataFrame(
-        [(a, b, c, d, int(r["at_median"]), med, chi2)],
-        "click_above long, click_below long, purchase_above long,"
-        " purchase_below long, at_median long, grand_median_e2 long,"
-        " chi2_e6 long")
-
-
-def _warc_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the WARC walk: re-derived from the pure
-    warc_file_spec formulas — a hex-instead-of-base32 digest, a
-    skipped CRLF separator check, or an embedded-HTTP length slip
-    flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.warcfile import (
-        warc_file_spec,
-    )
-    rows = []
-    for i in range(n):
-        recs = warc_file_spec(i, seed)
-        uris = "|".join(r["uri"] or "" for r in recs)
-        bodies = b"|".join(
-            r["body"][r["body"].find(b"\r\n\r\n") + 4:]
-            if r["type"] == "response" else b"" for r in recs)
-        n200 = sum(1 for r in recs if r["type"] == "response"
-                   and b" 200 " in r["body"][:20])
-        rows.append(
-            f"({i}, {len(recs)},"
-            f" {sum(1 for r in recs if r['type'] == 'response')},"
-            f" {sum(1 for r in recs if r['type'] == 'request')},"
-            f" {1 if i % 5 == 0 else 0}, {n200},"
-            f" {sum(len(r['body']) for r in recs)},"
-            f" '{_h.md5(uris.encode()).hexdigest()}',"
-            f" '{_h.md5(bodies).hexdigest()}')")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id,"
-        " CAST(n_records AS INTEGER) AS n_records,"
-        " CAST(n_responses AS INTEGER) AS n_responses,"
-        " CAST(n_requests AS INTEGER) AS n_requests,"
-        " CAST(n_bad_digest AS INTEGER) AS n_bad_digest,"
-        " CAST(n_http_200 AS INTEGER) AS n_http_200,"
-        " CAST(total_payload_bytes AS BIGINT)"
-        " AS total_payload_bytes, uris_md5, bodies_md5"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, n_records, n_responses, n_requests,"
-        " n_bad_digest, n_http_200, total_payload_bytes, uris_md5,"
-        " bodies_md5)")
-
-
-@register("multimodal_warc_records", _warc_fixture_sql())
-def multimodal_warc_records(spark, sf_dir):
-    """WARC (ISO 28500) manifest via the HAND-ROLLED record walk
-    (sources/warcfile.warc_manifest) — the format web-scale corpora
-    actually arrive in (Common Crawl ships WARC): CRLF-disciplined
-    version blocks, byte-exact Content-Length, BOTH two-CRLF record
-    separators verified (the off-by-one-CRLF classic), the
-    WARC-Payload-Digest verified in its canonical sha1+RFC 4648
-    BASE32 form (hex-encoders fail every record; every 5th file
-    plants a corrupted digest so the failure path is pinned), and
-    response records' embedded HTTP/1.1 messages parsed with their
-    own Content-Length cross-checked against the actual body. The
-    acquisition surface a 100 TB text pipeline starts from; one
-    mapInPandas over the binary column, fully distributed."""
-    from .sources.warcfile import synthetic_warcs, warc_manifest
-    return warc_manifest(synthetic_warcs(spark, 30))
 
 
 _URLCANON_SQL = """
@@ -39362,92 +7881,6 @@ def data_html_extract(spark, sf_dir):
     return html_extract_manifest(docs)
 
 
-_KUIPER_SQL = """
-WITH v AS (
-  SELECT event_type AS et, CAST(round(value * 100) AS BIGINT) AS v
-  FROM events WHERE event_type IN ('click', 'purchase')
-), h AS (
-  SELECT v,
-         CAST(count(*) FILTER (WHERE et = 'click') AS BIGINT) AS c1,
-         CAST(count(*) FILTER (WHERE et = 'purchase')
-              AS BIGINT) AS c2
-  FROM v GROUP BY v
-), tot AS (
-  SELECT sum(c1) AS n, sum(c2) AS m FROM h
-), c AS (
-  SELECT v,
-         sum(c1) OVER (ORDER BY v) AS f1,
-         sum(c2) OVER (ORDER BY v) AS f2
-  FROM h
-), d AS (
-  SELECT v, f1 * (SELECT m FROM tot) - f2 * (SELECT n FROM tot)
-             AS diff
-  FROM c
-), ext AS (
-  SELECT max(diff) AS dplus, max(-diff) AS dminus FROM d
-)
-SELECT CAST((SELECT n FROM tot) AS BIGINT) AS n_clicks,
-       CAST((SELECT m FROM tot) AS BIGINT) AS n_purchases,
-       CAST(greatest(e.dplus, 0) AS BIGINT) AS dplus_scaled,
-       CAST(greatest(e.dminus, 0) AS BIGINT) AS dminus_scaled,
-       CAST(greatest(e.dplus, 0) + greatest(e.dminus, 0) AS BIGINT)
-           AS kuiper_v_scaled,
-       CAST((greatest(e.dplus, 0) + greatest(e.dminus, 0)) * 1000000
-            // ((SELECT n FROM tot) * (SELECT m FROM tot))
-            AS BIGINT) AS kuiper_v_e6
-FROM ext e
-"""
-
-
-@register("q_events_kuiper_test", _KUIPER_SQL)
-def q_events_kuiper_test(spark, sf_dir):
-    """Kuiper's two-sample test between the click and purchase value
-    distributions — the cyclic-invariant refinement of
-    Kolmogorov-Smirnov: V = D+ + D- (the SUM of the largest ECDF
-    exceedances in each direction, where KS keeps only the max of the
-    two), equally sensitive at the distribution's tails and center
-    and invariant under cyclic shifts — the right form for anything
-    periodic. ECDF differences are kept as EXACT integers by
-    cross-scaling (F1·m - F2·n over the common refinement), so D+,
-    D- and V are exact with one e6 floor at emission. One histogram +
-    one cumulative window — the same O(distinct values) plan as the
-    KS row it extends."""
-    v = (_t(spark, sf_dir, "events")
-         .filter(F.col("event_type").isin("click", "purchase"))
-         .select(F.col("event_type").alias("et"),
-                 F.round(F.col("value") * 100).cast("long")
-                 .alias("v")))
-    h = v.groupBy("v").agg(
-        F.sum(F.when(F.col("et") == "click", 1).otherwise(0))
-        .cast("long").alias("c1"),
-        F.sum(F.when(F.col("et") == "purchase", 1).otherwise(0))
-        .cast("long").alias("c2"))
-    tot = h.agg(F.sum("c1").alias("n"), F.sum("c2").alias("m"))
-    wc = Window.orderBy("v")
-    c = h.select("v", F.sum("c1").over(wc).alias("f1"),
-                 F.sum("c2").over(wc).alias("f2"))
-    d = (c.crossJoin(F.broadcast(tot))
-         .select((F.col("f1") * F.col("m")
-                  - F.col("f2") * F.col("n")).alias("diff"),
-                 "n", "m"))
-    ext = d.agg(F.max("diff").alias("dplus"),
-                F.max(-F.col("diff")).alias("dminus"),
-                F.first("n").alias("n"), F.first("m").alias("m"))
-    return ext.select(
-        F.col("n").cast("long").alias("n_clicks"),
-        F.col("m").cast("long").alias("n_purchases"),
-        F.greatest("dplus", F.lit(0)).cast("long")
-        .alias("dplus_scaled"),
-        F.greatest("dminus", F.lit(0)).cast("long")
-        .alias("dminus_scaled"),
-        (F.greatest("dplus", F.lit(0))
-         + F.greatest("dminus", F.lit(0))).cast("long")
-        .alias("kuiper_v_scaled"),
-        F.expr("CAST((greatest(dplus, 0) + greatest(dminus, 0))"
-               " * 1000000 div (n * m) AS BIGINT)")
-        .alias("kuiper_v_e6"))
-
-
 _CRAWL_SCHED_SQL = """
 WITH u AS (
   SELECT CAST(user_id % 7 AS BIGINT) AS host,
@@ -39518,2008 +7951,6 @@ def data_crawl_schedule(spark, sf_dir):
         (F.col("fetch_us") - F.col("disc_us")).alias("wait_us"),
         (F.col("gap").isNull()
          | (F.col("gap") >= F.col("delay_us"))).alias("compliant"))
-
-
-def _sitemap_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the sitemap walk: re-derived from the pure
-    sitemap_file_spec formulas (canonical counts via the shared URL
-    canonicalizer on the SPEC locs, never the parser) — a skipped
-    entity decode in <loc>, a float-round-tripped priority or a
-    mis-skipped unknown child flips the hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.functions.urltools import (
-        canonicalize_url,
-    )
-    from knowledge_extraction_pipeline_spark.sources.sitemapfile import (
-        sitemap_file_spec,
-    )
-    rows = []
-    for i in range(n):
-        sp = sitemap_file_spec(i, seed)
-        locs = "|".join(u["loc"] for u in sp)
-        canon = {canonicalize_url(u["loc"]) for u in sp}
-        rows.append(
-            f"({i}, {len(sp)},"
-            f" {sum(1 for u in sp if u['lastmod'])},"
-            f" {sum(1 for u in sp if u['priority_e1'] >= 8)},"
-            f" {sum(1 for u in sp if u['unknown'])}, {len(canon)},"
-            f" {sum(u['priority_e1'] for u in sp)},"
-            f" '{_h.md5(locs.encode()).hexdigest()}')")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id,"
-        " CAST(n_urls AS INTEGER) AS n_urls,"
-        " CAST(n_with_lastmod AS INTEGER) AS n_with_lastmod,"
-        " CAST(n_high_priority AS INTEGER) AS n_high_priority,"
-        " CAST(n_unknown_children AS INTEGER) AS n_unknown_children,"
-        " CAST(n_canonical_distinct AS INTEGER)"
-        " AS n_canonical_distinct,"
-        " CAST(priority_sum_e1 AS BIGINT) AS priority_sum_e1,"
-        " locs_md5"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, n_urls, n_with_lastmod, n_high_priority,"
-        " n_unknown_children, n_canonical_distinct, priority_sum_e1,"
-        " locs_md5)")
-
-
-@register("multimodal_sitemap_urls", _sitemap_fixture_sql())
-def multimodal_sitemap_urls(spark, sf_dir):
-    """XML sitemap manifest via the HAND-ROLLED strict-subset walk
-    (sources/sitemapfile.sitemap_manifest): <urlset> with its xmlns
-    verified, <url>/<loc>/<lastmod>/<priority> entries where '&amp;'
-    entity references inside <loc> are DECODED (mandatory escaping in
-    valid sitemap XML — skipping it emits wrong URLs), priorities
-    parsed as EXACT e1 integers with range enforcement (no float
-    round-trip), ISO lastmod shape-checked, unknown children
-    counted-and-skipped, the 50000-URL spec limit enforced, and
-    <sitemapindex> honestly refused. Extracted locs feed the SAME
-    canonicalizer the frontier uses, tying discovery to URL dedup
-    (distinct-canonical counts emitted). Completes the acquisition
-    chain: robots politeness → sitemap discovery → crawl schedule →
-    WARC records → HTML extraction → URL/content dedup. One
-    mapInPandas, fully distributed."""
-    from .sources.sitemapfile import sitemap_manifest, synthetic_sitemaps
-    return sitemap_manifest(synthetic_sitemaps(spark, 30))
-
-
-_HNSW_SQL = """
-WITH RECURSIVE e AS (
-  SELECT vec_id, embedding::DOUBLE[] AS v
-  FROM embeddings ORDER BY vec_id LIMIT 200
-), idx AS (SELECT * FROM e WHERE vec_id < 180),
-probes AS (SELECT * FROM e WHERE vec_id >= 180),
-lv AS (
-  SELECT vec_id,
-         CASE WHEN h % 4 != 0 THEN 0 WHEN h % 16 != 0 THEN 1
-              WHEN h % 64 != 0 THEN 2 WHEN h % 256 != 0 THEN 3
-              ELSE 4 END AS lvl
-  FROM (SELECT vec_id,
-               CAST(CAST(concat('0x', substr(md5(concat('hnsw:',
-                    CAST(vec_id AS VARCHAR))), 1, 16)) AS UBIGINT)
-                    % 1073741824 AS BIGINT) AS h
-        FROM idx) q
-), dii AS (
-  SELECT a.vec_id AS s, b.vec_id AS t,
-         CAST(floor(list_sum(list_transform(range(1, len(a.v) + 1),
-           j -> (a.v[CAST(j AS INTEGER)] - b.v[CAST(j AS INTEGER)])
-              * (a.v[CAST(j AS INTEGER)] - b.v[CAST(j AS INTEGER)])))
-           * 1000000) AS BIGINT) AS d
-  FROM idx a JOIN idx b ON a.vec_id <> b.vec_id
-), adjt AS (
-  SELECT L, s AS src, list(t ORDER BY rn) AS nbrs FROM (
-    SELECT ls.lvl_layer AS L, dii.s, dii.t,
-           row_number() OVER (PARTITION BY ls.lvl_layer, dii.s
-                              ORDER BY dii.d, dii.t) AS rn
-    FROM (SELECT unnest(range(0, 5)) AS lvl_layer) ls
-    JOIN dii ON true
-    JOIN lv la ON la.vec_id = dii.s AND la.lvl >= ls.lvl_layer
-    JOIN lv lb ON lb.vec_id = dii.t AND lb.lvl >= ls.lvl_layer) q
-  WHERE rn <= 6 GROUP BY L, s
-), top AS (
-  SELECT max(lvl) AS ml FROM lv
-), ent AS (
-  SELECT min(vec_id) AS entry FROM lv, top WHERE lvl = top.ml
-), dqp AS (
-  SELECT p.vec_id AS q, x.vec_id AS t,
-         CAST(floor(list_sum(list_transform(range(1, len(p.v) + 1),
-           j -> (p.v[CAST(j AS INTEGER)] - x.v[CAST(j AS INTEGER)])
-              * (p.v[CAST(j AS INTEGER)] - x.v[CAST(j AS INTEGER)])))
-           * 1000000) AS BIGINT) AS d
-  FROM probes p, idx x
-), dql AS (
-  SELECT q, list(d ORDER BY t) AS dq FROM dqp GROUP BY q
-), st AS (
-  SELECT d2.q, 0 AS step, 0 AS phase,
-         greatest((SELECT ml FROM top), 1) AS layer,
-         (SELECT entry FROM ent) AS cur, d2.dq,
-         CAST([] AS BIGINT[]) AS visited,
-         CAST([] AS BIGINT[][]) AS cand,
-         CAST([] AS BIGINT[][]) AS best,
-         CAST(0 AS BIGINT) AS hops, CAST(0 AS BIGINT) AS pops
-  FROM dql d2
-  UNION ALL
-  SELECT s.q, s.step + 1,
-    CASE WHEN s.phase = 0 THEN
-      CASE WHEN mv.better THEN 0
-           WHEN s.layer > 1 THEN 0 ELSE 1 END
-    ELSE CASE WHEN fin.stop THEN 2 ELSE 1 END END,
-    CASE WHEN s.phase = 0 AND NOT mv.better AND s.layer > 1
-         THEN s.layer - 1 ELSE s.layer END,
-    CASE WHEN s.phase = 0 AND mv.better
-         THEN nb.bp[2] ELSE s.cur END,
-    s.dq,
-    CASE WHEN s.phase = 0 AND NOT mv.better AND s.layer <= 1
-         THEN [s.cur]
-         WHEN s.phase = 1 AND NOT fin.stop
-         THEN s.visited || ex.new ELSE s.visited END,
-    CASE WHEN s.phase = 0 AND NOT mv.better AND s.layer <= 1
-         THEN [[s.dq[CAST(s.cur AS INTEGER) + 1], s.cur]]
-         WHEN s.phase = 1 AND NOT fin.stop
-         THEN list_filter(s.cand, x -> x != pk.cm)
-              || list_transform(ex.new,
-                                t -> [s.dq[CAST(t AS INTEGER) + 1],
-                                      t])
-         ELSE s.cand END,
-    CASE WHEN s.phase = 0 AND NOT mv.better AND s.layer <= 1
-         THEN [[s.dq[CAST(s.cur AS INTEGER) + 1], s.cur]]
-         WHEN s.phase = 1 AND NOT fin.stop
-         THEN list_sort(s.best || list_transform(ex.new,
-              t -> [s.dq[CAST(t AS INTEGER) + 1], t]))[1:16]
-         ELSE s.best END,
-    CASE WHEN s.phase = 0 AND mv.better THEN s.hops + 1
-         ELSE s.hops END,
-    CASE WHEN s.phase = 1 AND NOT fin.stop THEN s.pops + 1
-         ELSE s.pops END
-  FROM st s
-  LEFT JOIN adjt a0 ON s.phase = 0 AND a0.L = s.layer
-                    AND a0.src = s.cur
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN s.phase = 1 AND len(s.cand) > 0
-           THEN list_sort(s.cand)[1] END AS cm) pk
-  LEFT JOIN adjt a1 ON s.phase = 1 AND pk.cm IS NOT NULL
-                    AND a1.L = 0 AND a1.src = pk.cm[2]
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN s.phase = 0 AND a0.nbrs IS NOT NULL
-           THEN list_sort(list_transform(a0.nbrs,
-                t -> [s.dq[CAST(t AS INTEGER) + 1], t]))[1]
-           END AS bp) nb
-  CROSS JOIN LATERAL (
-    SELECT s.phase = 0 AND nb.bp IS NOT NULL
-           AND nb.bp < [s.dq[CAST(s.cur AS INTEGER) + 1], s.cur]
-               AS better) mv
-  CROSS JOIN LATERAL (
-    SELECT s.phase = 1 AND (pk.cm IS NULL
-           OR (len(s.best) >= 16
-               AND pk.cm > list_sort(s.best)[-1])) AS stop) fin
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN s.phase = 1 AND NOT fin.stop
-           THEN list_filter(coalesce(a1.nbrs, CAST([] AS BIGINT[])),
-                            t -> NOT list_contains(s.visited, t))
-           ELSE CAST([] AS BIGINT[]) END AS new) ex
-  WHERE s.phase < 2
-), done AS (
-  SELECT q, cur, best, hops, pops
-  FROM st WHERE phase = 2
-), truenn AS (
-  SELECT q, t AS true_id, d AS true_d FROM (
-    SELECT q, t, d, row_number() OVER (PARTITION BY q
-                                       ORDER BY d, t) AS rn
-    FROM dqp) x WHERE rn = 1
-), res AS (
-  SELECT d.q AS probe_id, (SELECT entry FROM ent) AS entry_used,
-         d.hops AS descend_hops, d.pops AS ef_pops,
-         list_sort(d.best)[1][2] AS found_id,
-         list_sort(d.best)[1][1] AS found_d2_e6,
-         t.true_id, t.true_d AS true_d2_e6,
-         list_sort(d.best)[1][2] = t.true_id AS hit
-  FROM done d JOIN truenn t ON t.q = d.q
-)
-SELECT probe_id, entry_used, descend_hops, ef_pops, found_id,
-       found_d2_e6, true_id, true_d2_e6, hit,
-       CAST((SELECT count(*) FILTER (WHERE hit) FROM res) * 1000000
-            // (SELECT count(*) FROM res) AS BIGINT) AS recall1_e6
-FROM res
-"""
-
-
-@register("ann_hnsw_search", _HNSW_SQL)
-def ann_hnsw_search(spark, sf_dir):
-    """HNSW-style hierarchical graph search (Malkov-Yashunin) made
-    FULLY DETERMINISTIC and replayed end-to-end: md5-geometric level
-    assignment (p = 1/4, cap 4), per-layer directed 6-NN graphs over
-    e6-floored exact distances, greedy descent from the max-level
-    entry through the upper layers, then a beam (ef = 16) best-first
-    search at layer 0 — pop the closest unexpanded candidate, stop
-    when it cannot improve a full beam, expand unvisited neighbors —
-    with every probe's descent hops, beam pops, found neighbor and
-    the EXACT nearest neighbor emitted beside the corpus recall@1.
-    The 180-vector index / 20-probe split is the audit scale; recall
-    is honestly partial (random 64-d embeddings are the adversarial
-    case for graph ANN — the measured number IS the result, the
-    dedup_eval discipline). Completes the ann_* family with the
-    production graph index next to IVF/PQ/LSH. Engine: driver replay
-    of the identical algorithm; oracle: one list-state recursion
-    (visited/cand/beam carried per probe, chooser and expansion in
-    chained LATERALs)."""
-    import hashlib as _h
-    import math as _m
-    rows = (_t(spark, sf_dir, "embeddings").orderBy("vec_id")
-            .limit(200)
-            .select("vec_id",
-                    F.col("embedding").cast("array<double>")
-                    .alias("v")).collect())
-    vecs = {int(r["vec_id"]): list(r["v"]) for r in rows}
-    index_ids = sorted(v for v in vecs if v < 180)
-    probe_ids = sorted(v for v in vecs if v >= 180)
-
-    def d2(a, b):
-        s = 0.0
-        for x, y in zip(vecs[a], vecs[b]):
-            s += (x - y) * (x - y)
-        return _m.floor(s * 1000000)
-
-    def lvl(v):
-        h = int(_h.md5(f"hnsw:{v}".encode()).hexdigest()[:16],
-                16) % (2 ** 30)
-        k = 0
-        while h % 4 == 0 and k < 4:
-            k += 1
-            h //= 4
-        return k
-
-    levels = {v: lvl(v) for v in index_ids}
-    ml = max(levels.values())
-    entry = min(v for v in index_ids if levels[v] == ml)
-    adj = {}
-    for L in range(ml + 1):
-        members = [v for v in index_ids if levels[v] >= L]
-        for s in members:
-            adj[(L, s)] = [t for _, t in
-                           sorted((d2(s, t), t) for t in members
-                                  if t != s)[:6]]
-    out = []
-    hits = 0
-    for q in probe_ids:
-        dq = {t: d2(q, t) for t in index_ids}
-        cur, hops = entry, 0
-        for L in range(ml, 0, -1):
-            while True:
-                cands = sorted((dq[t], t) for t in adj[(L, cur)])
-                if cands and cands[0] < (dq[cur], cur):
-                    cur = cands[0][1]
-                    hops += 1
-                else:
-                    break
-        visited = [cur]
-        cand = [(dq[cur], cur)]
-        best = [(dq[cur], cur)]
-        pops = 0
-        while cand:
-            cm = min(cand)
-            if len(best) >= 16 and cm > max(best):
-                break
-            cand.remove(cm)
-            pops += 1
-            for t in adj[(0, cm[1])]:
-                if t in visited:
-                    continue
-                visited.append(t)
-                cand.append((dq[t], t))
-                best.append((dq[t], t))
-            best = sorted(best)[:16]
-        found_d, found = min(best)
-        true_d, true_id = min((dq[t], t) for t in index_ids)
-        hit = found == true_id
-        hits += hit
-        out.append((q, entry, hops, pops, found, found_d, true_id,
-                    true_d, hit))
-    rec = hits * 1000000 // len(probe_ids)
-    return spark.createDataFrame(
-        [r + (rec,) for r in out],
-        "probe_id long, entry_used long, descend_hops long,"
-        " ef_pops long, found_id long, found_d2_e6 long,"
-        " true_id long, true_d2_e6 long, hit boolean,"
-        " recall1_e6 long")
-
-
-_MARKOV_ATTR_SQL = """
-WITH RECURSIVE ev AS (
-  SELECT user_id, CAST(ts AS DATE) AS day, event_type,
-         CAST(row_number() OVER (PARTITION BY user_id, CAST(ts AS DATE)
-                                 ORDER BY ts, event_id) AS BIGINT)
-             AS rn
-  FROM events
-), firstp AS (
-  SELECT user_id, day, min(rn) AS prn FROM ev
-  WHERE event_type = 'purchase' GROUP BY 1, 2
-), kept AS (
-  SELECT e.user_id, e.day, e.event_type, e.rn
-  FROM ev e LEFT JOIN firstp f
-    ON f.user_id = e.user_id AND f.day = e.day
-  WHERE f.prn IS NULL OR e.rn <= f.prn
-), idx AS (
-  SELECT 0 AS i, 'start' AS nm UNION ALL SELECT 1, 'click'
-  UNION ALL SELECT 2, 'error' UNION ALL SELECT 3, 'signup'
-  UNION ALL SELECT 4, 'view'
-), firsts AS (
-  SELECT event_type FROM kept WHERE rn = 1
-), pairs AS (
-  SELECT a.event_type AS pa, b.event_type AS pb
-  FROM kept a JOIN kept b ON b.user_id = a.user_id
-    AND b.day = a.day AND b.rn = a.rn + 1
-  WHERE a.event_type <> 'purchase'
-), tc AS (
-  SELECT i.i,
-    CAST(CASE WHEN i.i = 0
-         THEN (SELECT count(*) FROM firsts)
-         ELSE (SELECT count(*) FROM kept
-               WHERE event_type = i.nm) END AS HUGEINT) AS tv,
-    CAST(CASE WHEN i.i = 0
-         THEN (SELECT count(*) FROM firsts
-               WHERE event_type = 'purchase')
-         ELSE (SELECT count(*) FROM pairs
-               WHERE pa = i.nm AND pb = 'purchase') END
-         AS HUGEINT) AS cv
-  FROM idx i
-), cc AS (
-  SELECT a.i, b.j, CAST(coalesce(
-    CASE WHEN a.i = 0
-    THEN (SELECT count(*) FROM firsts WHERE event_type = b.nm)
-    ELSE (SELECT count(*) FROM pairs
-          WHERE pa = a.nm AND pb = b.nm) END, 0) AS HUGEINT) AS c
-  FROM idx a, (SELECT i AS j, nm FROM idx WHERE i > 0) b
-), cells AS (
-  SELECT t.i, coalesce(c.j, t2.j) AS j,
-         CASE WHEN t.i = coalesce(c.j, t2.j) THEN t.tv
-              ELSE CAST(0 AS HUGEINT) END
-           - coalesce(c.c, 0) AS v
-  FROM tc t
-  CROSS JOIN (SELECT i AS j FROM idx) t2
-  LEFT JOIN cc c ON c.i = t.i AND c.j = t2.j
-), amat AS (
-  SELECT (SELECT list(l ORDER BY i) FROM (
-            SELECT i, list(v ORDER BY j) AS l FROM cells
-            GROUP BY i) q) AS A,
-         (SELECT list(cv ORDER BY i) FROM tc) AS b
-), scen AS (
-  SELECT 0 AS sid, CAST(NULL AS INTEGER) AS k, false AS repl
-  UNION ALL SELECT 1, NULL, true
-  UNION ALL SELECT 10 + CAST(r.r AS INTEGER), CAST(r.r AS INTEGER),
-                   false
-  FROM (SELECT unnest(range(1, 5)) AS r) r
-  UNION ALL SELECT 20 + CAST(r.r AS INTEGER), CAST(r.r AS INTEGER),
-                   true
-  FROM (SELECT unnest(range(1, 5)) AS r) r
-), init AS (
-  SELECT s.sid,
-    list_transform(kx.kl, r -> list_transform(kx.kl, c ->
-      CASE WHEN s.repl AND c = 1
-      THEN m.b[CAST(r AS INTEGER)]
-      ELSE m.A[CAST(r AS INTEGER)][CAST(c AS INTEGER)] END)) AS mat,
-    CAST(len(kx.kl) AS INTEGER) AS msz
-  FROM scen s CROSS JOIN amat m
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN s.k IS NULL THEN [1, 2, 3, 4, 5]
-           WHEN s.k = 1 THEN [1, 3, 4, 5]
-           WHEN s.k = 2 THEN [1, 2, 4, 5]
-           WHEN s.k = 3 THEN [1, 2, 3, 5]
-           ELSE [1, 2, 3, 4] END AS kl) kx
-), st AS (
-  SELECT sid, 0 AS kk, mat, msz FROM init
-  UNION ALL
-  SELECT s.sid, s.kk + 1,
-         list_transform(range(1, s.msz + 1), i ->
-           list_transform(range(1, s.msz + 1), j ->
-             CASE WHEN i > s.kk + 1 AND j > s.kk + 1
-             THEN (s.mat[s.kk + 1][s.kk + 1] * s.mat[i][j]
-                   - s.mat[i][s.kk + 1] * s.mat[s.kk + 1][j])
-                  // (CASE WHEN s.kk = 0 THEN 1
-                      ELSE s.mat[s.kk][s.kk] END)
-             ELSE s.mat[i][j] END)),
-         s.msz
-  FROM st s WHERE s.kk < s.msz - 1
-), dets AS (
-  SELECT sid, mat[msz][msz] AS det
-  FROM st
-  QUALIFY row_number() OVER (PARTITION BY sid ORDER BY kk DESC) = 1
-), pf AS (
-  SELECT (SELECT det FROM dets WHERE sid = 1) * 1000000000
-         // (SELECT det FROM dets WHERE sid = 0) AS p_full
-)
-SELECT i.nm AS channel,
-       CAST((SELECT p_full FROM pf) AS BIGINT) AS p_full_e9,
-       CAST((SELECT det FROM dets WHERE sid = 20 + i.i)
-            * 1000000000
-            // (SELECT det FROM dets WHERE sid = 10 + i.i)
-            AS BIGINT) AS p_removed_e9,
-       CAST(CASE WHEN (SELECT p_full FROM pf) > 0
-            THEN ((SELECT p_full FROM pf)
-                  - (SELECT det FROM dets WHERE sid = 20 + i.i)
-                    * 1000000000
-                    // (SELECT det FROM dets WHERE sid = 10 + i.i))
-                 * 1000000 // (SELECT p_full FROM pf) END
-            AS BIGINT) AS removal_effect_e6,
-       CAST((SELECT count(*) FROM firsts) AS BIGINT)
-           AS n_conversations
-FROM idx i WHERE i.i > 0
-"""
-
-
-@register("q_events_markov_attribution", _MARKOV_ATTR_SQL)
-def q_events_markov_attribution(spark, sf_dir):
-    """Markov removal-effect attribution (Anderl et al. 2016 — the
-    data-driven alternative to last-touch/Shapley): user-day journeys
-    truncated at first purchase feed a first-order chain over
-    {start, click, error, signup, view} with purchase absorbing;
-    P(convert | start) is solved EXACTLY as a ratio of two Bareiss
-    determinants of the integer system (diag(T) - C)x = conv (row
-    denominators cleared, so every entry is a raw count — no
-    stochastic-matrix floats), and each channel's removal effect
-    re-solves the 4x4 system with that channel's row/column deleted
-    (visits become dropouts), 1 - P_removed/P_full floored once at
-    e9/e6. Ten determinants ride ONE scenario-keyed nested-list
-    recursion — the effective-resistance pattern applied to absorbing
-    chains — and diagonal dominance of diag(T)-C makes Bareiss
-    pivoting-free. The causal complement of the Shapley / position /
-    last-touch attribution rows. Engine: driver Bareiss over the
-    collected 5x7 count table; oracle: identical eliminations."""
-    e = _t(spark, sf_dir, "events")
-    wconv = Window.partitionBy("user_id", "day").orderBy("ts",
-                                                         "event_id")
-    ev = (e.withColumn("day", F.to_date("ts"))
-          .withColumn("rn", F.row_number().over(wconv)))
-    firstp = (ev.filter(F.col("event_type") == "purchase")
-              .groupBy("user_id", "day").agg(F.min("rn").alias("prn")))
-    kept = (ev.join(firstp, ["user_id", "day"], "left")
-            .filter(F.col("prn").isNull()
-                    | (F.col("rn") <= F.col("prn")))
-            .select("user_id", "day", "event_type", "rn"))
-    ch = ["click", "error", "signup", "view"]
-    cidx = {c: i + 1 for i, c in enumerate(ch)}
-    firsts = [r["event_type"] for r in
-              kept.filter(F.col("rn") == 1).collect()]
-    k2 = kept.select("user_id", "day", "event_type", "rn")
-    a, b = k2.alias("a"), k2.alias("b")
-    prs = [(r["pa"], r["pb"]) for r in
-           (a.join(b, (F.col("a.user_id") == F.col("b.user_id"))
-                   & (F.col("a.day") == F.col("b.day"))
-                   & (F.col("b.rn") == F.col("a.rn") + 1))
-            .filter(F.col("a.event_type") != "purchase")
-            .select(F.col("a.event_type").alias("pa"),
-                    F.col("b.event_type").alias("pb")).collect())]
-    kept_counts = {r["event_type"]: r["c"] for r in
-                   kept.groupBy("event_type")
-                   .agg(F.count("*").alias("c")).collect()}
-    n = 5
-    C = [[0] * n for _ in range(n)]
-    conv = [0] * n
-    T = [0] * n
-    T[0] = len(firsts)
-    for t in firsts:
-        if t == "purchase":
-            conv[0] += 1
-        else:
-            C[0][cidx[t]] += 1
-    for pa, pb in prs:
-        if pb == "purchase":
-            conv[cidx[pa]] += 1
-        else:
-            C[cidx[pa]][cidx[pb]] += 1
-    for c in ch:
-        T[cidx[c]] = kept_counts.get(c, 0)
-    A = [[(T[i] if i == j else 0) - C[i][j] for j in range(n)]
-         for i in range(n)]
-
-    def _det(mat):
-        m = [row[:] for row in mat]
-        sz = len(m)
-        if sz == 0:
-            return 1
-        for k in range(sz - 1):
-            piv = m[k - 1][k - 1] if k else 1
-            for i in range(k + 1, sz):
-                for j in range(k + 1, sz):
-                    m[i][j] = (m[k][k] * m[i][j]
-                               - m[i][k] * m[k][j]) // piv
-        return m[sz - 1][sz - 1]
-
-    def solve(keep):
-        Ak = [[A[i][j] for j in keep] for i in keep]
-        bk = [conv[i] for i in keep]
-        Ar = [[bk[r] if c == 0 else Ak[r][c]
-               for c in range(len(keep))] for r in range(len(keep))]
-        return _det(Ar) * 10 ** 9 // _det(Ak)
-
-    p_full = solve(list(range(5)))
-    out = []
-    for c in ch:
-        keep = [i for i in range(5) if i != cidx[c]]
-        p_rem = solve(keep)
-        eff = ((p_full - p_rem) * 10 ** 6 // p_full
-               if p_full > 0 else None)
-        out.append((c, p_full, p_rem, eff, len(firsts)))
-    return spark.createDataFrame(
-        out, "channel string, p_full_e9 long, p_removed_e9 long,"
-             " removal_effect_e6 long, n_conversations long")
-
-
-_BOCPD_SQL = """
-WITH RECURSIVE d AS (
-  SELECT CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS t,
-         CAST(c AS BIGINT) AS x0, day
-  FROM (SELECT CAST(ts AS DATE) AS day, count(*) AS c
-        FROM events GROUP BY 1)
-), med AS (
-  SELECT x0 AS m FROM (
-    SELECT x0, row_number() OVER (ORDER BY x0, day) AS rn,
-           count(*) OVER () AS n
-    FROM d) q WHERE rn = (n + 1) // 2
-), obs AS (
-  SELECT t, day, CASE WHEN x0 > (SELECT m FROM med)
-                 THEN 1 ELSE 0 END AS x
-  FROM d
-), nt AS (SELECT CAST(count(*) AS BIGINT) AS n FROM obs),
-st AS (
-  SELECT CAST(0 AS BIGINT) AS t,
-         [CAST(1000000000 AS HUGEINT)] AS w,
-         [CAST(0 AS BIGINT)] AS s,
-         CAST(0 AS BIGINT) AS x, CAST(0 AS BIGINT) AS map_r,
-         CAST(1000000000 AS HUGEINT) AS p_cp
-  FROM nt
-  UNION ALL
-  SELECT o.t,
-         nw.w2, ns.s2, CAST(o.x AS BIGINT),
-         CAST(list_position(nw.w2, list_max(nw.w2)) - 1 AS BIGINT),
-         nw.w2[1]
-  FROM st s0
-  JOIN obs o ON o.t = s0.t + 1
-  CROSS JOIN LATERAL (
-    SELECT list_transform(range(1, len(s0.w) + 1), r ->
-      s0.w[r] * (CASE WHEN o.x = 1 THEN 1 + s0.s[r]
-                 ELSE 1 + (r - 1) - s0.s[r] END)
-      // (2 + (r - 1))) AS wp) g
-  CROSS JOIN LATERAL (
-    SELECT list_sum(g.wp) // 10 AS cp,
-           list_transform(g.wp, v -> v * 9 // 10) AS grown) h
-  CROSS JOIN LATERAL (
-    SELECT [h.cp] || h.grown AS raw) r0
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN list_sum(r0.raw) > 0
-           THEN list_transform(r0.raw,
-                v -> v * 1000000000 // list_sum(r0.raw))
-           ELSE r0.raw END AS w2) nw
-  CROSS JOIN LATERAL (
-    SELECT [CAST(0 AS BIGINT)]
-           || list_transform(s0.s, v -> v + o.x) AS s2) ns
-)
-SELECT o.day, st.x AS above_median, st.map_r AS map_run_length,
-       CAST(st.p_cp AS BIGINT) AS p_changepoint_e9,
-       CAST(len(st.w) - 1 AS BIGINT) AS max_run_tracked
-FROM st JOIN obs o ON o.t = st.t
-"""
-
-
-@register("q_events_bocpd", _BOCPD_SQL)
-def q_events_bocpd(spark, sf_dir):
-    """Bayesian online changepoint detection (Adams & MacKay 2007)
-    over the daily above-median volume indicator: the FULL run-length
-    posterior carried forward day by day — Beta(1,1)-Bernoulli
-    predictive (1+s)/(2+r) per active run, geometric hazard 1/10
-    splitting every run's mass between growth (x9/10) and a fresh
-    changepoint (x1/10, summed into r=0) — entirely in e9 fixed point
-    with a shared renormalization floor each step, so both engines
-    carry bit-identical posteriors and the MAP run length and
-    changepoint probability need no tolerance. The Bayesian
-    complement of the frequentist CUSUM / Pettitt / Page-Hinkley
-    rows: those emit one changepoint, this emits the full posterior
-    trajectory (a wrong predictive at any day reshapes every later
-    distribution). Engine: driver fold over the 30-day series (state
-    = O(t) vector); oracle: identical list-state recursion."""
-    d = (_t(spark, sf_dir, "events")
-         .groupBy(F.col("ts").cast("date").alias("day"))
-         .agg(F.count("*").alias("c")).orderBy("day").collect())
-    vols = [(r["day"], int(r["c"])) for r in d]
-    n = len(vols)
-    med = sorted((c, day) for day, c in vols)[(n + 1) // 2 - 1][0]
-    xs = [(day, 1 if c > med else 0) for day, c in vols]
-    w = [10 ** 9]
-    s = [0]
-    out = []
-    for day, x in xs:
-        wp = [w[r] * ((1 + s[r]) if x == 1 else (1 + r - s[r]))
-              // (2 + r) for r in range(len(w))]
-        cp = sum(wp) // 10
-        grown = [v * 9 // 10 for v in wp]
-        raw = [cp] + grown
-        tot = sum(raw)
-        w = ([v * 10 ** 9 // tot for v in raw] if tot > 0 else raw)
-        s = [0] + [v + x for v in s]
-        map_r = w.index(max(w))
-        out.append((day, x, map_r, w[0], len(w) - 1))
-    return spark.createDataFrame(
-        out, "day date, above_median long, map_run_length long,"
-             " p_changepoint_e9 long, max_run_tracked long")
-
-
-_SUFFIX_ARRAY_SQL = """
-WITH base AS (
-  SELECT regexp_replace(lower(substr(text, 1, 160)), '[^a-z ]', '',
-                        'g') || '$' AS s
-  FROM documents ORDER BY doc_id LIMIT 1
-), pos AS (
-  SELECT s, CAST(unnest(range(1, len(s) + 1)) AS INTEGER) AS p
-  FROM base
-), suf AS (
-  SELECT p, substr(s, p) AS suffix, s FROM pos
-), sa AS (
-  SELECT p, suffix, s,
-         CAST(row_number() OVER (ORDER BY suffix) AS BIGINT) AS rk
-  FROM suf
-), lcp AS (
-  SELECT sa.rk, sa.p, sa.s,
-         lag(sa.suffix) OVER (ORDER BY sa.rk) AS prev,
-         sa.suffix
-  FROM sa
-), lv AS (
-  SELECT rk, p, s,
-         CASE WHEN prev IS NULL THEN 0
-         ELSE coalesce(list_min(list_transform(
-             range(1, least(len(prev), len(suffix)) + 1),
-             q -> CASE WHEN substr(prev, CAST(q AS INTEGER), 1)
-                       != substr(suffix, CAST(q AS INTEGER), 1)
-                  THEN q - 1 END)),
-           least(len(prev), len(suffix))) END AS lcp
-  FROM lcp
-)
-SELECT rk AS rank, CAST(p AS BIGINT) AS suffix_start,
-       CAST(lcp AS BIGINT) AS lcp_prev,
-       CAST((SELECT max(lcp) FROM lv) AS BIGINT) AS max_repeat_len,
-       CAST(CAST((SELECT len(s) FROM base) AS BIGINT)
-            * ((SELECT len(s) FROM base) + 1) // 2
-            - (SELECT sum(lcp) FROM lv) AS BIGINT)
-           AS distinct_substrings
-FROM lv
-"""
-
-
-@register("text_suffix_array", _SUFFIX_ARRAY_SQL)
-def text_suffix_array(spark, sf_dir):
-    """Suffix array + LCP array of the pinned 160-char document
-    prefix ('$'-terminated) — the index structure behind longest-
-    repeated-substring, full-text search and the BWT rows: every
-    suffix ranked lexicographically, each adjacent pair's longest
-    common prefix computed by first-mismatch position (exact integer
-    scan, no heuristics), with the classic identities emitted as
-    cross-checks on every row — max(LCP) is the longest repeated
-    substring's length, and n(n+1)/2 - sum(LCP) is the distinct-
-    substring count (the same number text_distinct_substrings derives
-    by an entirely different method, so the two queries audit each
-    other). Engine: one rank window + one lag over the bounded pinned
-    prefix; oracle: identical windows."""
-    import re as _re
-    doc = (_t(spark, sf_dir, "documents").orderBy("doc_id").limit(1)
-           .select("text").collect())
-    s = _re.sub(r"[^a-z ]", "", doc[0]["text"][:160].lower()) + "$"
-    n = len(s)
-    sufs = sorted((s[p - 1:], p) for p in range(1, n + 1))
-    out = []
-    total_lcp = 0
-    lcps = []
-    for rk, (suf, p) in enumerate(sufs, start=1):
-        if rk == 1:
-            lcp = 0
-        else:
-            prev = sufs[rk - 2][0]
-            lcp = 0
-            for a, b in zip(prev, suf):
-                if a != b:
-                    break
-                lcp += 1
-        lcps.append((rk, p, lcp))
-        total_lcp += lcp
-    mx = max(l for _, _, l in lcps)
-    dsub = n * (n + 1) // 2 - total_lcp
-    out = [(rk, p, l, mx, dsub) for rk, p, l in lcps]
-    return spark.createDataFrame(
-        out, "rank long, suffix_start long, lcp_prev long,"
-             " max_repeat_len long, distinct_substrings long")
-
-
-def _elf_fixture_sql(n: int = 30, seed: int = 42) -> str:
-    """Oracle for the ELF walk: re-derived from the pure
-    elf_file_spec formulas — a hardcoded endianness, an ELF32 p_flags
-    read at the ELF64 offset, or an unresolved sh_name flips the
-    hash."""
-    import hashlib as _h
-    from knowledge_extraction_pipeline_spark.sources.elffile import (
-        elf_file_spec,
-    )
-    rows = []
-    for i in range(n):
-        sp = elf_file_spec(i, seed)
-        secs = (sp["sections"] if ".shstrtab" in sp["sections"]
-                else sp["sections"] + [".shstrtab"])
-        s0 = sp["segs"][0]
-        entry_ok = (s0["vaddr"] <= sp["entry"]
-                    < s0["vaddr"] + s0["memsz"])
-        rows.append(
-            f"({i}, {'TRUE' if sp['is64'] else 'FALSE'},"
-            f" {'TRUE' if sp['big'] else 'FALSE'}, {sp['e_type']},"
-            f" {sp['machine']}, {len(sp['segs'])},"
-            f" {len(sp['segs'])}, {len(secs)}, TRUE,"
-            f" {'TRUE' if entry_ok else 'FALSE'},"
-            f" {sum(s['filesz'] for s in sp['segs'])},"
-            f" '{_h.md5('|'.join(secs).encode()).hexdigest()}')")
-    return (
-        "SELECT CAST(file_id AS BIGINT) AS file_id,"
-        " CAST(is64 AS BOOLEAN) AS is64,"
-        " CAST(big_endian AS BOOLEAN) AS big_endian,"
-        " CAST(e_type AS INTEGER) AS e_type,"
-        " CAST(machine AS INTEGER) AS machine,"
-        " CAST(n_phdrs AS INTEGER) AS n_phdrs,"
-        " CAST(n_loads AS INTEGER) AS n_loads,"
-        " CAST(n_sections AS INTEGER) AS n_sections,"
-        " CAST(sizes_ok AS BOOLEAN) AS sizes_ok,"
-        " CAST(entry_in_exec_load AS BOOLEAN) AS entry_in_exec_load,"
-        " CAST(total_filesz AS BIGINT) AS total_filesz, names_md5"
-        f" FROM (VALUES {', '.join(rows)})"
-        " t(file_id, is64, big_endian, e_type, machine, n_phdrs,"
-        " n_loads, n_sections, sizes_ok, entry_in_exec_load,"
-        " total_filesz, names_md5)")
-
-
-@register("multimodal_elf_headers", _elf_fixture_sql())
-def multimodal_elf_headers(spark, sf_dir):
-    """ELF header manifest via the HAND-ROLLED class-and-endianness-
-    parametric walk (sources/elffile.elf_manifest, System V gABI):
-    all four CLASS x DATA combinations exercised (32/64-bit,
-    LSB/MSB — e_ident declares them per file and every multi-byte
-    field honors the declaration; p_flags moves between offset 24 in
-    ELF32 and offset 4 in ELF64, the classic struct-reuse bug),
-    declared header sizes VERIFIED against the class
-    (52/32/40 vs 64/56/64), PT_LOAD's filesz <= memsz invariant
-    enforced, section names RESOLVED through .shstrtab with
-    e_shstrndx validated, and the entry point checked against
-    executable PT_LOAD ranges. Unknown classes/encodings and bad
-    versions honestly refused. The executable-container discipline
-    beside the media and archive walks; one mapInPandas, fully
-    distributed."""
-    from .sources.elffile import elf_manifest, synthetic_elfs
-    return elf_manifest(synthetic_elfs(spark, 30))
-
-
-_SPECTRAL_SQL = """
-WITH RECURSIVE m AS MATERIALIZED (
-  SELECT DISTINCT d.doc_id, lex.term
-  FROM documents d, {lex}
-  WHERE list_contains(string_split(d.text, ' '), lex.term)
-), e AS MATERIALIZED (
-  SELECT a.term AS a, b.term AS b
-  FROM m a JOIN m b ON a.doc_id = b.doc_id AND a.term < b.term
-  GROUP BY a.term, b.term
-  HAVING count(*) >= 330
-), bd AS (SELECT a AS x, b AS y FROM e UNION SELECT b, a FROM e),
-nodes AS (SELECT DISTINCT x AS term FROM bd),
-comp AS (
-  SELECT DISTINCT term FROM nodes
-  WHERE term IN (
-    WITH RECURSIVE rc(v) AS (
-      SELECT min(term) FROM nodes
-      UNION
-      SELECT bd.y FROM rc JOIN bd ON bd.x = rc.v)
-    SELECT v FROM rc)
-), ty AS (
-  SELECT term, CAST(row_number() OVER (ORDER BY term) AS INTEGER)
-             AS ti
-  FROM comp
-), nn AS (
-  SELECT x.ti AS i, y.ti AS j,
-         CAST(CASE WHEN EXISTS (SELECT 1 FROM e
-                WHERE (e.a = x.term AND e.b = y.term)
-                   OR (e.a = y.term AND e.b = x.term))
-              THEN 1 ELSE 0 END AS HUGEINT) AS adj
-  FROM ty x, ty y
-), deg AS (SELECT i, sum(adj) AS d FROM nn GROUP BY i),
-consts AS (
-  SELECT (SELECT list(l ORDER BY i) FROM (
-            SELECT n2.i, list(CASE WHEN n2.i = n2.j
-                   THEN (SELECT max(d) FROM deg) + 1 - dg.d
-                   ELSE n2.adj END ORDER BY n2.j) AS l
-            FROM nn n2 JOIN deg dg ON dg.i = n2.i
-            GROUP BY n2.i) q) AS M,
-         (SELECT CAST(count(*) AS INTEGER) FROM ty) AS k
-), st AS (
-  SELECT 0 AS it,
-         list_transform(range(1, c.k + 1), i ->
-           CAST((CAST(CAST(concat('0x', substr(md5(concat('fied:',
-                CAST(i AS VARCHAR))), 1, 16)) AS UBIGINT) % 2001
-                AS HUGEINT) - 1000) * 1000000 AS HUGEINT)) AS x,
-         c.M AS M, c.k AS k
-  FROM consts c
-  UNION ALL
-  SELECT s.it + 1,
-         list_transform(dm.y2, v -> CASE WHEN v >= 0
-           THEN v * 1000000000 // nx.mx
-           ELSE -((-v) * 1000000000 // nx.mx) END),
-         s.M, s.k
-  FROM st s
-  CROSS JOIN LATERAL (
-    SELECT list_transform(range(1, s.k + 1), i ->
-      list_sum(list_transform(range(1, s.k + 1),
-               j -> s.M[i][j] * s.x[j]))) AS y) mv
-  CROSS JOIN LATERAL (
-    SELECT list_sum(mv.y) AS sy) sm
-  CROSS JOIN LATERAL (
-    SELECT list_transform(mv.y, v ->
-      v - (CASE WHEN sm.sy >= 0 THEN sm.sy // s.k
-           ELSE -((-sm.sy) // s.k) END)) AS y2) dm
-  CROSS JOIN LATERAL (
-    SELECT greatest(list_max(list_transform(dm.y2, v -> abs(v))),
-                    1) AS mx) nx
-  WHERE s.it < 25
-), fin AS (SELECT x, k FROM st WHERE it = 25),
-vals AS (
-  SELECT ty.term, f.x[ty.ti] AS fe9, ty.ti
-  FROM fin f, ty
-), cut AS (
-  SELECT CAST(count(*) AS BIGINT) AS cut_edges
-  FROM e JOIN vals va ON va.term = e.a
-  JOIN vals vb ON vb.term = e.b
-  WHERE (va.fe9 >= 0) != (vb.fe9 >= 0)
-), sides AS (
-  SELECT CAST(sum(CASE WHEN fe9 >= 0 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_pos,
-         CAST(sum(CASE WHEN fe9 < 0 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_neg
-  FROM vals
-)
-SELECT v.term, CAST(v.fe9 AS BIGINT) AS fiedler_e9,
-       v.fe9 >= 0 AS side,
-       (SELECT cut_edges FROM cut) AS cut_edges,
-       (SELECT n_pos FROM sides) AS n_pos,
-       (SELECT n_neg FROM sides) AS n_neg
-FROM vals v
-""".format(lex=kg_docs.lexicon_values_sql())
-
-
-@register("kg_spectral_bisection_docs", _SPECTRAL_SQL)
-def kg_spectral_bisection_docs(spark, sf_dir):
-    """Spectral bisection of the sparsified co-occurrence graph's
-    main component — the Fiedler-vector partition behind multilevel
-    graph partitioners: power iteration on the spectrum-flipped
-    matrix (maxdeg+1)I - L whose dominant eigenvector is the all-ones
-    nullvector of L, DEFLATED by re-centering every iterate (subtract
-    the truncated mean), so the iteration converges toward the
-    algebraic-connectivity eigenvector; 25 iterations entirely in
-    fixed point with SIGN-EXPLICIT truncating divisions (negative
-    floor-vs-truncate is exactly where engines diverge, so both sides
-    spell out sign(v)*(|v|//m)), md5-seeded start vector, iterates
-    renormalized to e9 by max-|component|. Each node's Fiedler
-    component and sign-side are emitted with the induced cut size
-    and side populations — the spectral complement of the Louvain /
-    conductance rows (on the complete-graph scales the Fiedler
-    eigenspace is degenerate and the PINNED deterministic iterate is
-    the result, as documented). Engine: driver iteration over the
-    vocabulary-bounded component; oracle: identical list recursion."""
-    import hashlib as _h
-    from .operators.canonicalize import connected_components
-    edges = (_cooc_edges(spark, sf_dir, 330)
-             .select(F.col("term_a").alias("src"),
-                     F.col("term_b").alias("dst")))
-    comp = (connected_components(edges, driver_threshold=0)
-            .select(F.col("norm_term").alias("node"),
-                    F.col("canon").alias("component")))
-    root = comp.agg(F.min("node").alias("r")).collect()[0]["r"]
-    rc = (comp.filter(F.col("node") == root)
-          .select("component").collect()[0][0])
-    main = {r["node"] for r in
-            comp.filter(F.col("component") == F.lit(rc)).collect()}
-    erows = sorted((r["src"], r["dst"]) for r in edges.collect()
-                   if r["src"] in main and r["dst"] in main)
-    terms = sorted(main)
-    ti = {t: i for i, t in enumerate(terms)}
-    k = len(terms)
-    A = [[0] * k for _ in range(k)]
-    for a, b in erows:
-        A[ti[a]][ti[b]] = A[ti[b]][ti[a]] = 1
-    degs = [sum(row) for row in A]
-    c = max(degs) + 1
-    M = [[(c - degs[i]) if i == j else A[i][j] for j in range(k)]
-         for i in range(k)]
-
-    def tdiv(a, b):
-        return a // b if a >= 0 else -((-a) // b)
-
-    x = [(int(_h.md5(f"fied:{i + 1}".encode()).hexdigest()[:16], 16)
-          % 2001 - 1000) * 1000000 for i in range(k)]
-    for _ in range(25):
-        y = [sum(M[i][j] * x[j] for j in range(k)) for i in range(k)]
-        sy = sum(y)
-        y = [v - tdiv(sy, k) for v in y]
-        mx = max(max(abs(v) for v in y), 1)
-        x = [tdiv(v * 10 ** 9, mx) for v in y]
-    cut = sum(1 for a, b in erows
-              if (x[ti[a]] >= 0) != (x[ti[b]] >= 0))
-    n_pos = sum(1 for v in x if v >= 0)
-    out = [(t, x[ti[t]], x[ti[t]] >= 0, cut, n_pos, k - n_pos)
-           for t in terms]
-    return spark.createDataFrame(
-        out, "term string, fiedler_e9 long, side boolean,"
-             " cut_edges long, n_pos long, n_neg long")
-
-
-_MMD_SQL = """
-WITH v AS (
-  SELECT event_type AS et, CAST(round(value) AS BIGINT) AS v
-  FROM events WHERE event_type IN ('click', 'purchase')
-), h AS (
-  SELECT v,
-         CAST(count(*) FILTER (WHERE et = 'click') AS BIGINT) AS c1,
-         CAST(count(*) FILTER (WHERE et = 'purchase')
-              AS BIGINT) AS c2
-  FROM v GROUP BY v
-), tot AS (SELECT sum(c1) AS n, sum(c2) AS m FROM h),
-pairs AS (
-  SELECT a.c1 * b.c1 * (10000 // (100 + abs(a.v - b.v))) AS xx,
-         a.c2 * b.c2 * (10000 // (100 + abs(a.v - b.v))) AS yy,
-         a.c1 * b.c2 * (10000 // (100 + abs(a.v - b.v))) AS xy
-  FROM h a, h b
-), s AS (
-  SELECT CAST(sum(xx) AS HUGEINT) AS sxx,
-         CAST(sum(yy) AS HUGEINT) AS syy,
-         CAST(sum(xy) AS HUGEINT) AS sxy
-  FROM pairs
-)
-SELECT CAST(t.n AS BIGINT) AS n_clicks,
-       CAST(t.m AS BIGINT) AS n_purchases,
-       CAST(s.sxx AS BIGINT) AS kxx_sum_e2,
-       CAST(s.syy AS BIGINT) AS kyy_sum_e2,
-       CAST(s.sxy AS BIGINT) AS kxy_sum_e2,
-       CAST(CASE WHEN s.sxx * t.m * t.m + s.syy * t.n * t.n
-                      - 2 * s.sxy * t.n * t.m >= 0
-            THEN (s.sxx * t.m * t.m + s.syy * t.n * t.n
-                  - 2 * s.sxy * t.n * t.m) * 1000000000
-                 // (CAST(t.n AS HUGEINT) * t.n * t.m * t.m * 100)
-            ELSE -((-(s.sxx * t.m * t.m + s.syy * t.n * t.n
-                      - 2 * s.sxy * t.n * t.m)) * 1000000000
-                   // (CAST(t.n AS HUGEINT) * t.n * t.m * t.m
-                       * 100)) END AS BIGINT) AS mmd2_e9
-FROM s, tot t
-"""
-
-
-@register("q_events_mmd", _MMD_SQL)
-def q_events_mmd(spark, sf_dir):
-    """Maximum mean discrepancy (Gretton et al.) between the click
-    and purchase value distributions under an integer Cauchy-type
-    kernel k(u,v) = floor(10000/(100+|u-v|)) — the kernel two-sample
-    statistic that sees ALL moments where KS/Kuiper see only the
-    CDF: MMD^2 = E k(x,x') + E k(y,y') - 2 E k(x,y), computed
-    EXACTLY over the whole-unit value histograms (O(distinct^2) cell
-    pairs, never row pairs), the three kernel sums kept as exact
-    integers and combined over the common n^2 m^2 denominator in
-    HUGEINT with one sign-explicit e9 floor at emission. Biased
-    V-statistic form (diagonal included), stated; a negative estimate
-    is representable and honestly signed. One histogram + one bounded
-    self-join."""
-    v = (_t(spark, sf_dir, "events")
-         .filter(F.col("event_type").isin("click", "purchase"))
-         .select(F.col("event_type").alias("et"),
-                 F.round(F.col("value")).cast("long").alias("v")))
-    h = v.groupBy("v").agg(
-        F.sum(F.when(F.col("et") == "click", 1).otherwise(0))
-        .cast("long").alias("c1"),
-        F.sum(F.when(F.col("et") == "purchase", 1).otherwise(0))
-        .cast("long").alias("c2"))
-    a, b = h.alias("a"), h.alias("b")
-    kern = F.expr("10000 div (100 + abs(a.v - b.v))")
-    s = (a.crossJoin(b)
-         .agg(F.sum(F.col("a.c1") * F.col("b.c1") * kern)
-              .alias("sxx"),
-              F.sum(F.col("a.c2") * F.col("b.c2") * kern)
-              .alias("syy"),
-              F.sum(F.col("a.c1") * F.col("b.c2") * kern)
-              .alias("sxy")).collect()[0])
-    t = h.agg(F.sum("c1").alias("n"),
-              F.sum("c2").alias("m")).collect()[0]
-    n, m = int(t["n"]), int(t["m"])
-    sxx, syy, sxy = int(s["sxx"]), int(s["syy"]), int(s["sxy"])
-    num = sxx * m * m + syy * n * n - 2 * sxy * n * m
-    den = n * n * m * m * 100
-    mmd2 = (num * 10 ** 9 // den if num >= 0
-            else -((-num) * 10 ** 9 // den))
-    return spark.createDataFrame(
-        [(n, m, sxx, syy, sxy, mmd2)],
-        "n_clicks long, n_purchases long, kxx_sum_e2 long,"
-        " kyy_sum_e2 long, kxy_sum_e2 long, mmd2_e9 long")
-
-
-_PANEL_FE_SQL = """
-WITH p AS (
-  SELECT o_custkey AS cust, date_trunc('month', o_orderdate) AS mth,
-         CAST(count(*) AS BIGINT) AS x,
-         CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-              AS BIGINT) AS y
-  FROM orders GROUP BY 1, 2
-), ent AS (
-  SELECT cust, CAST(count(*) AS BIGINT) AS ni,
-         sum(x) AS sx, sum(y) AS sy,
-         sum(x * y) AS sxy, sum(x * x) AS sxx
-  FROM p GROUP BY cust
-), within AS (
-  SELECT cust, ni,
-         ni * sxy - sx * sy AS wxy,
-         ni * sxx - sx * sx AS wxx
-  FROM ent WHERE ni >= 2
-), fl AS (
-  SELECT
-    CAST(sum(CASE WHEN wxy >= 0 THEN wxy * 1000000 // ni
-             ELSE -((-wxy) * 1000000 // ni) END) AS HUGEINT)
-        AS num_e6,
-    CAST(sum(wxx * 1000000 // ni) AS HUGEINT) AS den_e6,
-    CAST(count(*) AS BIGINT) AS n_entities,
-    CAST(sum(ni) AS BIGINT) AS n_obs
-  FROM within
-), pooled AS (
-  SELECT CAST(count(*) AS HUGEINT) AS n,
-         CAST(sum(x) AS HUGEINT) AS sx,
-         CAST(sum(y) AS HUGEINT) AS sy,
-         CAST(sum(x * y) AS HUGEINT) AS sxy,
-         CAST(sum(x * x) AS HUGEINT) AS sxx
-  FROM p
-)
-SELECT f.n_entities, f.n_obs,
-       CAST(CASE WHEN f.num_e6 >= 0
-            THEN f.num_e6 * 1000000 // f.den_e6
-            ELSE -((-f.num_e6) * 1000000 // f.den_e6) END
-            AS BIGINT) AS beta_within_e6,
-       CAST(CASE WHEN po.n * po.sxy - po.sx * po.sy >= 0
-            THEN (po.n * po.sxy - po.sx * po.sy) * 1000000
-                 // (po.n * po.sxx - po.sx * po.sx)
-            ELSE -((-(po.n * po.sxy - po.sx * po.sy)) * 1000000
-                   // (po.n * po.sxx - po.sx * po.sx)) END
-            AS BIGINT) AS beta_pooled_e6
-FROM fl f, pooled po
-"""
-
-
-@register("q_orders_panel_within", _PANEL_FE_SQL)
-def q_orders_panel_within(spark, sf_dir):
-    """Panel fixed-effects (within) estimator on the customer-month
-    panel — monthly spend (e2 cents) on monthly order count, with
-    every customer's time-invariant level differenced out: the
-    within-entity cross-products n_i*Sxy - Sx*Sy over n_i (the
-    n-scaled demeaning identity that keeps everything integer, the
-    Kadane discipline), each entity's rational contribution floored
-    ONCE at e6 with sign-explicit truncation, pooled into HUGEINT
-    sums, and the plain pooled-OLS slope emitted beside it — the
-    difference IS the omitted-entity-effect bias the estimator
-    exists to remove. Singleton entities (no within variation) are
-    excluded by the standard convention and the entity/observation
-    counts ride along. One panel aggregate + one entity aggregate;
-    the econometric complement of the OLS / Theil-Sen / DiD rows."""
-    p = (_t(spark, sf_dir, "orders")
-         .groupBy(F.col("o_custkey").alias("cust"),
-                  F.date_trunc("month", "o_orderdate").alias("mth"))
-         .agg(F.count("*").cast("long").alias("x"),
-              F.sum(F.round(F.col("o_totalprice") * 100)
-                    .cast("long")).cast("long").alias("y")))
-    ent = p.groupBy("cust").agg(
-        F.count("*").cast("long").alias("ni"),
-        F.sum("x").alias("sx"), F.sum("y").alias("sy"),
-        F.sum(F.col("x") * F.col("y")).alias("sxy"),
-        F.sum(F.col("x") * F.col("x")).alias("sxx"))
-    within = (ent.filter(F.col("ni") >= 2)
-              .select("ni",
-                      (F.col("ni") * F.col("sxy")
-                       - F.col("sx") * F.col("sy")).alias("wxy"),
-                      (F.col("ni") * F.col("sxx")
-                       - F.col("sx") * F.col("sx")).alias("wxx")))
-    fl = within.agg(
-        F.sum(F.expr("CASE WHEN wxy >= 0 THEN wxy * 1000000 div ni"
-                     " ELSE -((-wxy) * 1000000 div ni) END"))
-        .alias("num"),
-        F.sum(F.expr("wxx * 1000000 div ni")).alias("den"),
-        F.count("*").cast("long").alias("n_entities"),
-        F.sum("ni").cast("long").alias("n_obs")).collect()[0]
-    po = p.agg(F.count("*").alias("n"), F.sum("x").alias("sx"),
-               F.sum("y").alias("sy"),
-               F.sum(F.col("x") * F.col("y")).alias("sxy"),
-               F.sum(F.col("x") * F.col("x")).alias("sxx")) \
-        .collect()[0]
-    num, den = int(fl["num"]), int(fl["den"])
-    beta_w = (num * 10 ** 6 // den if num >= 0
-              else -((-num) * 10 ** 6 // den))
-    n, sx, sy, sxy, sxx = (int(po["n"]), int(po["sx"]),
-                           int(po["sy"]), int(po["sxy"]),
-                           int(po["sxx"]))
-    pn = n * sxy - sx * sy
-    pd_ = n * sxx - sx * sx
-    beta_p = (pn * 10 ** 6 // pd_ if pn >= 0
-              else -((-pn) * 10 ** 6 // pd_))
-    return spark.createDataFrame(
-        [(int(fl["n_entities"]), int(fl["n_obs"]), beta_w, beta_p)],
-        "n_entities long, n_obs long, beta_within_e6 long,"
-        " beta_pooled_e6 long")
-
-
-_MYERS_SQL = """
-WITH RECURSIVE ds AS (
-  SELECT doc_id,
-         regexp_replace(lower(substr(text, 1, 80)), '[^a-z ]', '',
-                        'g') AS s
-  FROM documents ORDER BY doc_id LIMIT 2
-), ab AS (
-  SELECT (SELECT s FROM ds ORDER BY doc_id LIMIT 1) AS a,
-         (SELECT s FROM ds ORDER BY doc_id DESC LIMIT 1) AS b
-), dims AS (
-  SELECT a, b, CAST(length(a) AS INTEGER) AS n,
-         CAST(length(b) AS INTEGER) AS m,
-         CAST(length(a) + length(b) AS INTEGER) AS mx
-  FROM ab
-), st AS (
-  SELECT -1 AS d,
-         list_transform(range(1, 2 * dims.mx + 2),
-                        i -> CAST(0 AS BIGINT)) AS V,
-         false AS done, CAST(-1 AS BIGINT) AS reach,
-         dims.a AS a, dims.b AS b, dims.n AS n, dims.m AS m,
-         dims.mx AS mx
-  FROM dims
-  UNION ALL
-  SELECT s.d + 1, nv.newV, dn.done2, dn.reach2,
-         s.a, s.b, s.n, s.m, s.mx
-  FROM st s
-  CROSS JOIN LATERAL (SELECT s.d + 1 AS dd) t0
-  CROSS JOIN LATERAL (
-    SELECT list_transform(range(0, t0.dd + 1), t ->
-      CAST(-t0.dd + 2 * t AS BIGINT)) AS ks) t1
-  CROSS JOIN LATERAL (
-    SELECT list_transform(t1.ks, k ->
-      (CASE WHEN k = -t0.dd OR (k != t0.dd
-             AND s.V[CAST(k - 1 + s.mx + 1 AS INTEGER)]
-               < s.V[CAST(k + 1 + s.mx + 1 AS INTEGER)])
-       THEN s.V[CAST(k + 1 + s.mx + 1 AS INTEGER)]
-       ELSE s.V[CAST(k - 1 + s.mx + 1 AS INTEGER)] + 1 END)) AS x0
-    ) t2
-  CROSS JOIN LATERAL (
-    SELECT list_transform(range(1, len(t1.ks) + 1), ti ->
-      t2.x0[CAST(ti AS INTEGER)]
-      + coalesce(list_min(list_transform(
-          range(1, least(s.n - t2.x0[CAST(ti AS INTEGER)],
-                         s.m - (t2.x0[CAST(ti AS INTEGER)]
-                                - t1.ks[CAST(ti AS INTEGER)]))
-                   + 1),
-          q -> CASE WHEN substr(s.a,
-                 CAST(t2.x0[CAST(ti AS INTEGER)] + q AS INTEGER), 1)
-               != substr(s.b,
-                 CAST(t2.x0[CAST(ti AS INTEGER)]
-                      - t1.ks[CAST(ti AS INTEGER)] + q AS INTEGER),
-                 1)
-               THEN q - 1 END)),
-        greatest(least(s.n - t2.x0[CAST(ti AS INTEGER)],
-                       s.m - (t2.x0[CAST(ti AS INTEGER)]
-                              - t1.ks[CAST(ti AS INTEGER)])),
-                 0))) AS xs) t3
-  CROSS JOIN LATERAL (
-    SELECT list_transform(range(1, 2 * s.mx + 2), i ->
-      CASE WHEN abs(i - 1 - s.mx) <= t0.dd
-            AND (i - 1 - s.mx + t0.dd) % 2 = 0
-      THEN t3.xs[CAST((i - 1 - s.mx + t0.dd) // 2 + 1 AS INTEGER)]
-      ELSE s.V[CAST(i AS INTEGER)] END) AS newV) nv
-  CROSS JOIN LATERAL (
-    SELECT len(list_filter(range(1, len(t1.ks) + 1), ti ->
-             t3.xs[CAST(ti AS INTEGER)] >= s.n
-             AND t3.xs[CAST(ti AS INTEGER)]
-                 - t1.ks[CAST(ti AS INTEGER)] >= s.m)) > 0 AS done2,
-           list_max(list_transform(range(1, len(t1.ks) + 1), ti ->
-             2 * t3.xs[CAST(ti AS INTEGER)]
-             - t1.ks[CAST(ti AS INTEGER)])) AS reach2) dn
-  WHERE NOT s.done AND s.d < s.mx
-), fin AS (
-  SELECT min(d) AS dist FROM st WHERE done
-)
-SELECT s.d, s.reach AS best_reach, s.done,
-       CAST((SELECT dist FROM fin) AS BIGINT) AS edit_distance,
-       CAST((s.n + s.m - (SELECT dist FROM fin)) // 2 AS BIGINT)
-           AS lcs_implied
-FROM st s WHERE s.d >= 0
-"""
-
-
-@register("text_myers_diff", _MYERS_SQL)
-def text_myers_diff(spark, sf_dir):
-    """Myers O(ND) diff (the algorithm inside git) between the two
-    pinned 80-char document prefixes: the furthest-reaching V array
-    advanced one edit-distance band d at a time — the PARITY trick
-    making every diagonal k within a band independent (k reads only
-    opposite-parity cells from band d-1, so the classic in-place
-    update is really a parallel map), greedy snakes extended by
-    exact first-mismatch scans (the suffix-array LCP idiom), stopping
-    at the first band that reaches (n, m). The whole per-band
-    best-reach trajectory is emitted (a wrong V cell anywhere shifts
-    some band's reach) with the final edit distance and the implied
-    LCS via the D = n + m - 2L identity — pinned against an
-    independent full-DP LCS in tests. The shortest-edit-script
-    complement of the Smith-Waterman / Needleman-Wunsch scoring
-    family. Engine: bounded driver replay; oracle: identical
-    V-carrying recursion with the band map in chained LATERALs."""
-    import re as _re
-    docs = (_t(spark, sf_dir, "documents").orderBy("doc_id").limit(2)
-            .select("text").collect())
-    a = _re.sub(r"[^a-z ]", "", docs[0]["text"][:80].lower())
-    b = _re.sub(r"[^a-z ]", "", docs[1]["text"][:80].lower())
-    n, m = len(a), len(b)
-    mx = n + m
-    off = mx
-    V = [0] * (2 * mx + 1)
-    out = []
-    dist = None
-    for d in range(0, mx + 1):
-        newV = V[:]
-        reach = -1
-        done = False
-        for k in range(-d, d + 1, 2):
-            if k == -d or (k != d and V[k - 1 + off]
-                           < V[k + 1 + off]):
-                x = V[k + 1 + off]
-            else:
-                x = V[k - 1 + off] + 1
-            y = x - k
-            while x < n and y < m and a[x] == b[y]:
-                x += 1
-                y += 1
-            newV[k + off] = x
-            reach = max(reach, x + y)
-            if x >= n and y >= m:
-                done = True
-        V = newV
-        out.append((d, reach, done))
-        if done:
-            dist = d
-            break
-    lcs = (n + m - dist) // 2
-    return spark.createDataFrame(
-        [(d, r, dn, dist, lcs) for d, r, dn in out],
-        "d int, best_reach long, done boolean, edit_distance long,"
-        " lcs_implied long")
-
-
-_RING_M = 1 << 60  # 60-bit hash ring: md5-prefix positions stay in BIGINT
-
-_SHARD_RING_SQL = """
-WITH uh AS (
-  SELECT DISTINCT CAST(user_id AS VARCHAR) AS uid,
-         CAST(concat('0x', substr(md5('key:' || CAST(user_id AS VARCHAR)),
-                                  1, 15)) AS BIGINT) AS h
-  FROM events
-), vn AS (
-  SELECT n.node,
-         CAST(concat('0x', substr(md5('vnode:' || n.node || ':'
-                                      || CAST(v.v AS VARCHAR)),
-                                  1, 15)) AS BIGINT) AS p
-  FROM (VALUES ('n0'),('n1'),('n2'),('n3'),('n4')) n(node)
-  CROSS JOIN (SELECT unnest(range(0, 16)) AS v) v
-), ring AS (
-  SELECT uh.uid,
-         min(CASE WHEN vn.node <> 'n4' THEN
-           lpad(CAST((vn.p - uh.h + 1152921504606846976)
-                     % 1152921504606846976 AS VARCHAR), 19, '0')
-           || '|' || vn.node END) AS kb,
-         min(lpad(CAST((vn.p - uh.h + 1152921504606846976)
-                       % 1152921504606846976 AS VARCHAR), 19, '0')
-             || '|' || vn.node) AS ka
-  FROM uh CROSS JOIN vn GROUP BY uh.uid
-), hrw AS (
-  SELECT uh.uid,
-         max(CASE WHEN n.node <> 'n4' THEN
-           substr(md5('hrw:' || n.node || ':' || uh.uid), 1, 16)
-           || '|' || n.node END) AS kb,
-         max(substr(md5('hrw:' || n.node || ':' || uh.uid), 1, 16)
-             || '|' || n.node) AS ka
-  FROM uh CROSS JOIN (VALUES ('n0'),('n1'),('n2'),('n3'),('n4')) n(node)
-  GROUP BY uh.uid
-)
-SELECT CAST(r.uid AS BIGINT) AS user_id,
-       split_part(r.kb, '|', 2) AS ring_before,
-       split_part(r.ka, '|', 2) AS ring_after,
-       split_part(r.kb, '|', 2) <> split_part(r.ka, '|', 2) AS ring_moved,
-       (split_part(r.kb, '|', 2) = split_part(r.ka, '|', 2)
-        OR split_part(r.ka, '|', 2) = 'n4') AS ring_min_disruption,
-       split_part(w.kb, '|', 2) AS hrw_before,
-       split_part(w.ka, '|', 2) AS hrw_after,
-       split_part(w.kb, '|', 2) <> split_part(w.ka, '|', 2) AS hrw_moved,
-       (split_part(w.kb, '|', 2) = split_part(w.ka, '|', 2)
-        OR split_part(w.ka, '|', 2) = 'n4') AS hrw_min_disruption
-FROM ring r JOIN hrw w ON w.uid = r.uid
-"""
-
-
-@register("q_shard_placement_ring", _SHARD_RING_SQL)
-def q_shard_placement_ring(spark, sf_dir):
-    """Consistent-hash ring (16 virtual nodes per physical node, 60-bit
-    md5 positions, clockwise-successor ownership) and rendezvous/HRW
-    hashing (argmax of md5(node,key), the vnode-free alternative) assign
-    every distinct user to 4 shard nodes — then node n4 JOINS and both
-    assignments are recomputed, with the minimal-disruption theorem the
-    whole construction exists for PINNED per key: a key that changes
-    owner must land on the new node (moves between survivors would mean
-    re-sharding traffic proportional to K, not K/n). Both placements are
-    pure broadcast cross-joins (80 ring positions / 5 nodes) + one
-    per-key aggregate — the shard-routing primitive behind partition
-    assignment, cache placement and shuffle-service routing at 1000
-    executors, fully distributed, no collect. Clockwise distance and
-    argmin/argmax run on zero-padded fixed-width keys so lexicographic
-    min/max IS numeric order in both engines; ties (astronomically
-    unlikely 60-bit collisions) break on the node suffix identically."""
-    e = _t(spark, sf_dir, "events")
-    uh = (e.select(F.col("user_id").cast("string").alias("uid")).distinct()
-          .withColumn("h", F.conv(F.substring(F.md5(
-              F.concat(F.lit("key:"), F.col("uid"))), 1, 15), 16, 10)
-              .cast("long")))
-    nodes = spark.createDataFrame([(f"n{i}",) for i in range(5)],
-                                  "node string")
-    vn = (nodes.crossJoin(spark.range(16).select(
-              F.col("id").cast("string").alias("v")))
-          .withColumn("p", F.conv(F.substring(F.md5(F.concat_ws(
-              "", F.lit("vnode:"), F.col("node"), F.lit(":"),
-              F.col("v"))), 1, 15), 16, 10).cast("long")))
-    dist = (F.col("p") - F.col("h") + F.lit(_RING_M)) % F.lit(_RING_M)
-    rk = F.concat(F.lpad(dist.cast("string"), 19, "0"), F.lit("|"),
-                  F.col("node"))
-    ring = (uh.crossJoin(F.broadcast(vn)).withColumn("k", rk)
-            .groupBy("uid")
-            .agg(F.min(F.when(F.col("node") != "n4", F.col("k")))
-                 .alias("kb"),
-                 F.min("k").alias("ka")))
-    hk = F.concat(F.substring(F.md5(F.concat_ws(
-        "", F.lit("hrw:"), F.col("node"), F.lit(":"), F.col("uid"))),
-        1, 16), F.lit("|"), F.col("node"))
-    hrw = (uh.crossJoin(F.broadcast(nodes)).withColumn("k", hk)
-           .groupBy("uid")
-           .agg(F.max(F.when(F.col("node") != "n4", F.col("k")))
-                .alias("kb"),
-                F.max("k").alias("ka")))
-    own = lambda c: F.substring_index(c, "|", -1)  # noqa: E731
-    return (ring.join(hrw.withColumnRenamed("kb", "wb")
-                      .withColumnRenamed("ka", "wa"), "uid")
-            .select(
-                F.col("uid").cast("long").alias("user_id"),
-                own(F.col("kb")).alias("ring_before"),
-                own(F.col("ka")).alias("ring_after"),
-                (own(F.col("kb")) != own(F.col("ka"))).alias("ring_moved"),
-                ((own(F.col("kb")) == own(F.col("ka")))
-                 | (own(F.col("ka")) == F.lit("n4")))
-                .alias("ring_min_disruption"),
-                own(F.col("wb")).alias("hrw_before"),
-                own(F.col("wa")).alias("hrw_after"),
-                (own(F.col("wb")) != own(F.col("wa"))).alias("hrw_moved"),
-                ((own(F.col("wb")) == own(F.col("wa")))
-                 | (own(F.col("wa")) == F.lit("n4")))
-                .alias("hrw_min_disruption")))
-
-
-_MERKLE_SQL = """
-WITH RECURSIVE ev AS (
-  SELECT md5('ev:' || CAST(event_id AS VARCHAR) || ':'
-             || CAST(user_id AS VARCHAR) || ':' || event_type) AS eh,
-         md5('ex:' || CAST(event_id AS VARCHAR)) AS exh,
-         CAST(CAST(ts AS DATE) AS VARCHAR) AS day
-  FROM events
-), mn AS (
-  SELECT min(exh) AS mex FROM ev
-), exd AS (
-  SELECT min(CASE WHEN exh = (SELECT mex FROM mn) THEN day END)
-         AS excl_day
-  FROM ev
-), leaves AS (
-  SELECT day,
-         md5(string_agg(eh, '' ORDER BY eh)) AS ha,
-         md5(string_agg(CASE WHEN exh <> (SELECT mex FROM mn)
-                        THEN eh END, '' ORDER BY eh)) AS hb
-  FROM ev GROUP BY day
-), lv AS (
-  SELECT 0 AS level,
-         list(struct_pack(day := day, ha := ha, hb := hb)
-              ORDER BY day) AS l
-  FROM leaves
-  UNION ALL
-  SELECT level + 1,
-         list_transform(range(1, (len(l) + 1) // 2 + 1), i ->
-           struct_pack(
-             day := CAST(NULL AS VARCHAR),
-             ha := md5(l[CAST(2 * i - 1 AS INTEGER)].ha
-                       || l[CAST(least(2 * i, len(l)) AS INTEGER)].ha),
-             hb := md5(l[CAST(2 * i - 1 AS INTEGER)].hb
-                       || l[CAST(least(2 * i, len(l)) AS INTEGER)].hb)))
-  FROM lv WHERE len(l) > 1
-), nodes AS (
-  SELECT level, CAST(i - 1 AS INTEGER) AS idx,
-         l[CAST(i AS INTEGER)].day AS day,
-         l[CAST(i AS INTEGER)].ha AS h_a,
-         l[CAST(i AS INTEGER)].hb AS h_b,
-         l[CAST(i AS INTEGER)].ha <> l[CAST(i AS INTEGER)].hb AS differs
-  FROM lv, LATERAL (SELECT unnest(range(1, len(l) + 1)) AS i) t
-)
-SELECT CAST(level AS INTEGER) AS level, idx, day, h_a, h_b, differs,
-       CAST(sum(CASE WHEN differs THEN 1 ELSE 0 END)
-            OVER (PARTITION BY level) AS BIGINT) AS n_diff_level,
-       (level > 0 OR NOT differs
-        OR day = (SELECT excl_day FROM exd)) AS locate_ok
-FROM nodes
-"""
-
-
-@register("q_events_merkle_diff", _MERKLE_SQL)
-def q_events_merkle_diff(spark, sf_dir):
-    """Merkle-tree anti-entropy diff (the Dynamo/Cassandra repair and
-    rsync-catalog primitive) between two snapshots of the events table:
-    per-day leaf digests (md5 of the day's sorted per-row digests — one
-    distributed aggregate computes BOTH snapshots via a conditional
-    string-agg), snapshot B silently missing one md5-chosen row, then a
-    binary hash tree folded over the day-ordered leaves (odd lone child
-    promoted Bitcoin-style as md5(h||h)). Every tree node of every level
-    is emitted for both snapshots with the two properties that make
-    Merkle sync O(log n): exactly ONE differing node per level (the
-    ancestor path of the corrupted leaf — n_diff_level pinned 1 in
-    tests) and the differing leaf localizing to exactly the day of the
-    missing row (locate_ok PINNED per row). Leaf hashing is the
-    distributed part (per-day shuffle, scale-true: leaves are partition
-    digests, the per-partition lineage artifact of the checkpoint
-    design); the tree fold runs over ≤366 bounded partition digests.
-    Oracle: identical nested-list recursion, one level per step."""
-    import hashlib as _hl
-    e = _t(spark, sf_dir, "events")
-    eh = F.md5(F.concat_ws(":", F.lit("ev"),
-                           F.col("event_id").cast("string"),
-                           F.col("user_id").cast("string"),
-                           F.col("event_type")))
-    exh = F.md5(F.concat(F.lit("ex:"), F.col("event_id").cast("string")))
-    base = e.select(eh.alias("eh"), exh.alias("exh"),
-                    F.col("ts").cast("date").cast("string").alias("day"))
-    mn = base.agg(F.min("exh").alias("mex"))
-    j = base.crossJoin(F.broadcast(mn))
-    leaves = (j.groupBy("day").agg(
-        F.md5(F.array_join(F.sort_array(F.collect_list("eh")), ""))
-        .alias("ha"),
-        F.md5(F.array_join(F.sort_array(F.collect_list(
-            F.when(F.col("exh") != F.col("mex"), F.col("eh")))), ""))
-        .alias("hb"),
-        F.min(F.when(F.col("exh") == F.col("mex"), F.col("day")))
-        .alias("exd"))
-        .orderBy("day").collect())
-    excl_day = next(r["exd"] for r in leaves if r["exd"] is not None)
-    cur = [(r["day"], r["ha"], r["hb"]) for r in leaves]
-    md5 = lambda s: _hl.md5(s.encode()).hexdigest()  # noqa: E731
-    out, level = [], 0
-    while True:
-        ndiff = sum(1 for _, ha, hb in cur if ha != hb)
-        for idx, (day, ha, hb) in enumerate(cur):
-            differs = ha != hb
-            loc = (level > 0) or (not differs) or (day == excl_day)
-            out.append((level, idx, day, ha, hb, differs, ndiff, loc))
-        if len(cur) == 1:
-            break
-        cur = [(None,
-                md5(cur[i][1] + cur[min(i + 1, len(cur) - 1)][1]),
-                md5(cur[i][2] + cur[min(i + 1, len(cur) - 1)][2]))
-               for i in range(0, len(cur), 2)]
-        level += 1
-    return spark.createDataFrame(
-        out, "level int, idx int, day string, h_a string, h_b string,"
-             " differs boolean, n_diff_level long, locate_ok boolean")
-
-
-_ELIAS_FANO_SQL = """
-WITH lists AS (
-  SELECT 'type:' || event_type AS list_id, event_id AS x FROM events
-  UNION ALL
-  SELECT 'v100', event_id FROM events WHERE value >= 100
-  UNION ALL
-  SELECT 'v300', event_id FROM events WHERE value >= 300
-), uu AS (
-  SELECT max(event_id) + 1 AS u FROM events
-), px AS (
-  SELECT list_id, x,
-         row_number() OVER (PARTITION BY list_id ORDER BY x) - 1 AS i,
-         count(*) OVER (PARTITION BY list_id) AS n,
-         max(x) OVER (PARTITION BY list_id) AS mx,
-         (SELECT u FROM uu) AS u
-  FROM lists
-), ef AS (
-  SELECT list_id, x, i, n, mx, u,
-         greatest(length(bin(u // n)) - 1, 0) AS l
-  FROM px
-)
-SELECT list_id, CAST(i AS BIGINT) AS i, CAST(x AS BIGINT) AS x,
-       CAST(x // (CAST(1 AS BIGINT) << l) AS BIGINT) AS hi,
-       CAST(x % (CAST(1 AS BIGINT) << l) AS BIGINT) AS lo,
-       CAST(i + x // (CAST(1 AS BIGINT) << l) AS BIGINT) AS select_pos,
-       ((x // (CAST(1 AS BIGINT) << l)) * (CAST(1 AS BIGINT) << l)
-        + x % (CAST(1 AS BIGINT) << l)) = x AS recon_ok,
-       CAST(l AS INTEGER) AS l, CAST(n AS BIGINT) AS n_list,
-       CAST(u AS BIGINT) AS u,
-       CAST(n * l + n + mx // (CAST(1 AS BIGINT) << l) AS BIGINT)
-           AS total_bits,
-       (n * l + n + mx // (CAST(1 AS BIGINT) << l)) < n * (l + 3)
-           AS bound_ok
-FROM ef
-"""
-
-
-@register("search_elias_fano_postings", _ELIAS_FANO_SQL)
-def search_elias_fano_postings(spark, sf_dir):
-    """Elias-Fano encoding of monotone posting lists — the quasi-succinct
-    index representation inside modern search engines (Vigna 2013;
-    Lucene/Tantivy doc-id blocks): each sorted event-id list is split at
-    l = floor(log2(u/n)) bits (computed as length(bin(u div n))-1 — exact
-    integer bit math, no float log) into l explicit low bits plus a unary
-    high-bit vector in which the i-th element's 1 sits at position
-    i + (x_i >> l) — emitted as select_pos, the O(1)-access/select
-    identity. Three selectivity tiers exercise the split (per-type dense
-    lists, a ~13% filtered list, a ~0.2% rare list whose l jumps to ~9;
-    at the smallest scale the rare list is a single element — the n=1
-    edge). Per element the reconstruction (hi << l) | lo = x is pinned,
-    and per list the size bound total_bits < n*(l+3) — the 2 + log2(u/n)
-    bits/element quasi-succinct guarantee in integer form — is pinned
-    TRUE. Pure rank windows + expression math, fully distributed; the
-    partition key is the list id, exactly how a sharded index builder
-    would lay postings out."""
-    e = _t(spark, sf_dir, "events")
-    lists = (e.select(F.concat(F.lit("type:"), F.col("event_type"))
-                      .alias("list_id"), F.col("event_id").alias("x"))
-             .union(e.filter(F.col("value") >= 100)
-                    .select(F.lit("v100"), F.col("event_id")))
-             .union(e.filter(F.col("value") >= 300)
-                    .select(F.lit("v300"), F.col("event_id"))))
-    uu = e.agg((F.max("event_id") + 1).alias("u"))
-    wp = Window.partitionBy("list_id")
-    px = (lists
-          .select("list_id", "x",
-                  (F.row_number().over(wp.orderBy("x")) - 1).alias("i"),
-                  F.count(F.lit(1)).over(wp).alias("n"),
-                  F.max("x").over(wp).alias("mx"))
-          .crossJoin(F.broadcast(uu)))
-    ef = px.withColumn(
-        "l", F.greatest(F.length(F.bin(F.expr("u div n"))) - 1, F.lit(0)))
-    two_l = F.expr("shiftleft(CAST(1 AS BIGINT), l)")
-    hi = F.expr("x div shiftleft(CAST(1 AS BIGINT), l)")
-    lo = F.col("x") % two_l
-    mhi = F.expr("mx div shiftleft(CAST(1 AS BIGINT), l)")
-    return ef.select(
-        "list_id", F.col("i").cast("long").alias("i"),
-        F.col("x").cast("long").alias("x"),
-        hi.cast("long").alias("hi"), lo.cast("long").alias("lo"),
-        (F.col("i") + hi).cast("long").alias("select_pos"),
-        ((hi * two_l + lo) == F.col("x")).alias("recon_ok"),
-        F.col("l").cast("int").alias("l"),
-        F.col("n").cast("long").alias("n_list"),
-        F.col("u").cast("long").alias("u"),
-        (F.col("n") * F.col("l") + F.col("n") + mhi).cast("long")
-        .alias("total_bits"),
-        ((F.col("n") * F.col("l") + F.col("n") + mhi)
-         < F.col("n") * (F.col("l") + 3)).alias("bound_ok"))
-
-
-_GK_N = 400        # replay length (bounded, ordered by event_id)
-_GK_EPS_INV = 20   # eps = 1/20: 2*eps*n = n/10, eps*N = N/20
-
-_GK_SQL = """
-WITH RECURSIVE it AS (
-  SELECT event_id, CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-  FROM events ORDER BY event_id LIMIT 400
-), st AS (
-  SELECT 0 AS t,
-         CAST([] AS STRUCT(v BIGINT, g BIGINT, d BIGINT)[]) AS l,
-         (SELECT list(v ORDER BY event_id) FROM it) AS xs
-  UNION ALL
-  SELECT s.t + 1, fin.nl2, s.xs
-  FROM st s
-  CROSS JOIN LATERAL (
-    SELECT s.xs[CAST(s.t + 1 AS INTEGER)] AS x, s.t AS n0,
-           len(s.l) AS ln) t0
-  CROSS JOIN LATERAL (
-    SELECT len(list_filter(s.l, e -> e.v <= t0.x)) + 1 AS pos) t1
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN t1.pos = 1 OR t1.pos = t0.ln + 1 OR t0.n0 < 10
-           THEN 0 ELSE t0.n0 // 10 - 1 END AS dnew) t2
-  CROSS JOIN LATERAL (
-    SELECT s.l[1:CAST(t1.pos - 1 AS INTEGER)]
-           || [struct_pack(v := t0.x, g := CAST(1 AS BIGINT),
-                           d := CAST(t2.dnew AS BIGINT))]
-           || s.l[CAST(t1.pos AS INTEGER):CAST(t0.ln AS INTEGER)]
-           AS nl) t3
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN (s.t + 1) % 10 <> 0 THEN t3.nl ELSE
-      flatten(list_transform(range(1, len(t3.nl) // 2 + 1), k ->
-        CASE WHEN 2 * k - 1 > 1 AND 2 * k < len(t3.nl)
-                  AND t3.nl[CAST(2 * k - 1 AS INTEGER)].g
-                      + t3.nl[CAST(2 * k AS INTEGER)].g
-                      + t3.nl[CAST(2 * k AS INTEGER)].d
-                      <= (s.t + 1) // 10
-        THEN [struct_pack(
-               v := t3.nl[CAST(2 * k AS INTEGER)].v,
-               g := t3.nl[CAST(2 * k - 1 AS INTEGER)].g
-                    + t3.nl[CAST(2 * k AS INTEGER)].g,
-               d := t3.nl[CAST(2 * k AS INTEGER)].d)]
-        ELSE [t3.nl[CAST(2 * k - 1 AS INTEGER)],
-              t3.nl[CAST(2 * k AS INTEGER)]] END))
-      || (CASE WHEN len(t3.nl) % 2 = 1
-          THEN [t3.nl[CAST(len(t3.nl) AS INTEGER)]]
-          ELSE CAST([] AS STRUCT(v BIGINT, g BIGINT, d BIGINT)[]) END)
-      END AS nl2) fin
-  WHERE s.t < 400
-), finl AS (
-  SELECT l FROM st WHERE t = 400
-), summ AS (
-  SELECT CAST(i AS INTEGER) AS i,
-         l[CAST(i AS INTEGER)].v AS v,
-         l[CAST(i AS INTEGER)].g AS g,
-         l[CAST(i AS INTEGER)].d AS d,
-         len(l) AS sz
-  FROM finl, LATERAL (SELECT unnest(range(1, len(l) + 1)) AS i) t
-), cum AS (
-  SELECT i, v, g, d, sz,
-         sum(g) OVER (ORDER BY i) AS rmin,
-         sum(g) OVER (ORDER BY i) + d AS rmax
-  FROM summ
-), probe AS (
-  SELECT r, coalesce(
-           (SELECT min(c.i) FROM cum c WHERE c.rmin + c.d > r + 20) - 1,
-           (SELECT max(c.i) FROM cum c)) AS ai
-  FROM (VALUES (200), (360), (396)) p(r)
-), pv AS (
-  SELECT p.r, c.v,
-         NOT ((SELECT count(*) FROM it WHERE it.v < c.v) + 1 > p.r + 20
-              OR (SELECT count(*) FROM it WHERE it.v <= c.v) < p.r - 20)
-         AS ok
-  FROM probe p JOIN cum c ON c.i = greatest(p.ai, 1)
-)
-SELECT cum.i, cum.v, cum.g, cum.d,
-       CAST(cum.rmin AS BIGINT) AS rmin, CAST(cum.rmax AS BIGINT) AS rmax,
-       cum.g + cum.d <= 40 AS invariant_ok,
-       CAST(400 AS BIGINT) AS n, CAST(cum.sz AS BIGINT) AS summary_size,
-       (SELECT v FROM pv WHERE r = 200) AS q50_v,
-       (SELECT ok FROM pv WHERE r = 200) AS q50_ok,
-       (SELECT v FROM pv WHERE r = 360) AS q90_v,
-       (SELECT ok FROM pv WHERE r = 360) AS q90_ok,
-       (SELECT v FROM pv WHERE r = 396) AS q99_v,
-       (SELECT ok FROM pv WHERE r = 396) AS q99_ok
-FROM cum
-"""
-
-
-@register("sketch_gk_quantiles", _GK_SQL)
-def sketch_gk_quantiles(spark, sf_dir):
-    """Greenwald-Khanna ε-approximate quantile summary (the algorithm
-    inside Spark's own approxQuantile) replayed over the first 400 event
-    values in cents, ε = 1/20: tuples (v, g, Δ) inserted with Δ =
-    ⌊2εn⌋−1 (0 at the extremes and during warm-up), compressed every
-    ⌊1/(2ε)⌋ = 10 inserts by a deterministic single pass over DISJOINT
-    adjacent pairs — merging (vᵢ,gᵢ,Δᵢ),(vⱼ,gⱼ,Δⱼ) → (vⱼ,gᵢ+gⱼ,Δⱼ) only
-    when gᵢ+gⱼ+Δⱼ ≤ ⌊2εn⌋ and never touching the min/max sentinels, so
-    the GK invariant max(g+Δ) ≤ 2εn is maintained by construction and
-    PINNED per final tuple (invariant_ok). The whole final summary is
-    emitted with rmin/rmax rank bounds, and rank probes at p50/p90/p99
-    are answered by the paper's rule (last tuple before rmin+Δ exceeds
-    r+εN) then AUDITED against the exact rank interval of the returned
-    value over the raw 400 — |rank−r| ≤ εN = 20 pinned TRUE (q*_ok).
-    ~O(1/ε) summary vs 400 raw values; the mergeable-summary primitive
-    a 1000-executor percentile aggregation ships per partition. Engine:
-    bounded driver replay; oracle: identical one-insert-per-step
-    nested-list recursion with the pair-merge pass as a flattened
-    list_transform."""
-    rows = (_t(spark, sf_dir, "events").orderBy("event_id")
-            .limit(_GK_N)
-            .select(F.floor(F.col("value") * 100 + 0.5).cast("long")
-                    .alias("v")).collect())
-    xs = [r["v"] for r in rows]
-    l: list = []  # tuples [v, g, d], sorted by v
-    for t1, x in enumerate(xs, start=1):
-        n0 = t1 - 1
-        pos = sum(1 for e in l if e[0] <= x) + 1
-        dnew = 0 if (pos == 1 or pos == len(l) + 1 or n0 < 10) \
-            else n0 // 10 - 1
-        l = l[:pos - 1] + [[x, 1, dnew]] + l[pos - 1:]
-        if t1 % 10 == 0:
-            thr = t1 // 10
-            nl2, k = [], 0
-            while k + 1 < len(l):
-                a, b = l[k], l[k + 1]
-                if k > 0 and k + 2 < len(l) \
-                        and a[1] + b[1] + b[2] <= thr:
-                    nl2.append([b[0], a[1] + b[1], b[2]])
-                else:
-                    nl2.extend([a, b])
-                k += 2
-            if k < len(l):
-                nl2.append(l[k])
-            l = nl2
-    rmins, acc = [], 0
-    for v, g, d in l:
-        acc += g
-        rmins.append(acc)
-    eN = _GK_N // _GK_EPS_INV
-    probes = {}
-    for r in (200, 360, 396):
-        ai = next((i for i, (v, g, d) in enumerate(l, start=1)
-                   if rmins[i - 1] + d > r + eN), None)
-        ai = (ai - 1) if ai is not None else len(l)
-        ai = max(ai, 1)
-        v = l[ai - 1][0]
-        lt = sum(1 for y in xs if y < v)
-        le = sum(1 for y in xs if y <= v)
-        probes[r] = (v, not (lt + 1 > r + eN or le < r - eN))
-    out = [(i, v, g, d, rmins[i - 1], rmins[i - 1] + d,
-            g + d <= 2 * eN, _GK_N, len(l),
-            probes[200][0], probes[200][1], probes[360][0],
-            probes[360][1], probes[396][0], probes[396][1])
-           for i, (v, g, d) in enumerate(l, start=1)]
-    return spark.createDataFrame(
-        out, "i int, v long, g long, d long, rmin long, rmax long,"
-             " invariant_ok boolean, n long, summary_size long,"
-             " q50_v long, q50_ok boolean, q90_v long, q90_ok boolean,"
-             " q99_v long, q99_ok boolean")
-
-
-_MG_SQL = """
-WITH words AS (
-  SELECT doc_id, word AS w
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word
-        FROM documents)
-  WHERE word <> ''
-), tot AS (
-  SELECT count(*) AS n FROM words
-), sw AS (
-  SELECT CAST(concat('0x', substr(md5('mg:' || CAST(doc_id AS VARCHAR)),
-                                  1, 15)) AS BIGINT) % 8 AS s,
-         w, count(*) AS c
-  FROM words GROUP BY 1, 2
-), rk AS (
-  SELECT s, w, c,
-         row_number() OVER (PARTITION BY s ORDER BY c DESC, w) AS rn
-  FROM sw
-), wl AS (
-  SELECT s, w, c,
-         max(CASE WHEN rn = 9 THEN c ELSE 0 END) OVER (PARTITION BY s)
-         AS ws
-  FROM rk
-), est AS (
-  SELECT w, sum(c - ws) AS m
-  FROM wl WHERE c > ws GROUP BY w
-), mrk AS (
-  SELECT w, m, row_number() OVER (ORDER BY m DESC, w) AS rn
-  FROM est
-), mwl AS (
-  SELECT w, m, max(CASE WHEN rn = 9 THEN m ELSE 0 END) OVER () AS wm
-  FROM mrk
-), fin AS (
-  SELECT w, m - wm AS est FROM mwl WHERE m > wm
-), truth AS (
-  SELECT w, count(*) AS cnt FROM words GROUP BY w
-), missed AS (
-  SELECT count(*) AS miss
-  FROM truth t CROSS JOIN tot
-  WHERE t.cnt * 9 > tot.n AND t.w NOT IN (SELECT w FROM fin)
-)
-SELECT f.w AS word, CAST(f.est AS BIGINT) AS est,
-       CAST(t.cnt AS BIGINT) AS true_cnt,
-       CAST(tot.n AS BIGINT) AS n,
-       CAST(tot.n // 9 AS BIGINT) AS err_bound,
-       f.est <= t.cnt AS underestimate_ok,
-       t.cnt - f.est <= tot.n // 9 AS error_ok,
-       (SELECT miss FROM missed) = 0 AS no_missed_heavy,
-       CAST(8 AS INTEGER) AS k
-FROM fin f JOIN truth t ON t.w = f.w CROSS JOIN tot
-"""
-
-
-@register("sketch_misra_gries_merge", _MG_SQL)
-def sketch_misra_gries_merge(spark, sf_dir):
-    """Misra-Gries k=8 heavy hitters built the MERGEABLE way (Agarwal
-    et al., Mergeable Summaries): the word stream is md5-sharded by
-    document 8 ways, each shard's exact counts are REDUCED to a valid
-    MG summary by subtracting the (k+1)-th largest shard count (the MG
-    waterline — at most k survive, deterministic value-based cut so tie
-    order is irrelevant), the ≤ 8×8 surviving counters are summed by
-    word and reduced once more. No sequential counter replay anywhere —
-    exactly how a 1000-executor job ships per-partition summaries to one
-    combiner. The deterministic counterpart of the CMS heavy-hitter row:
-    CMS overestimates w.h.p., MG UNDERestimates with a hard bound, and
-    both pins ride every row — est ≤ true and true − est ≤ n/(k+1)
-    (mergeable-summaries theorem: the shard waterlines plus the merge
-    waterline sum to ≤ n/(k+1)), plus the completeness guarantee that no
-    word with true·9 > n (integer cross-multiplied) is missing from the
-    summary. Everything is groupBy + rank windows over bounded frames;
-    truth is a second exact aggregate for the audit."""
-    docs = _t(spark, sf_dir, "documents")
-    words = (docs.select("doc_id",
-                         F.explode(F.split("text", " ")).alias("w"))
-             .filter(F.col("w") != ""))
-    tot = words.agg(F.count(F.lit(1)).alias("n"))
-    shard = (F.conv(F.substring(F.md5(F.concat(
-        F.lit("mg:"), F.col("doc_id").cast("string"))), 1, 15), 16, 10)
-        .cast("long") % 8)
-    sw = (words.withColumn("s", shard)
-          .groupBy("s", "w").agg(F.count(F.lit(1)).alias("c")))
-    rk = sw.withColumn("rn", F.row_number().over(
-        Window.partitionBy("s").orderBy(F.desc("c"), "w")))
-    wl = rk.withColumn("ws", F.max(
-        F.when(F.col("rn") == 9, F.col("c")).otherwise(0))
-        .over(Window.partitionBy("s")))
-    est = (wl.filter(F.col("c") > F.col("ws"))
-           .groupBy("w").agg(F.sum(F.col("c") - F.col("ws")).alias("m")))
-    mrk = est.withColumn("rn", F.row_number().over(
-        Window.orderBy(F.desc("m"), "w")))
-    mwl = mrk.withColumn("wm", F.max(
-        F.when(F.col("rn") == 9, F.col("m")).otherwise(0))
-        .over(Window.partitionBy()))
-    fin = (mwl.filter(F.col("m") > F.col("wm"))
-           .select("w", (F.col("m") - F.col("wm")).alias("est")))
-    truth = words.groupBy("w").agg(F.count(F.lit(1)).alias("cnt"))
-    missed = (truth.crossJoin(F.broadcast(tot))
-              .filter(F.col("cnt") * 9 > F.col("n"))
-              .join(fin, "w", "left_anti")
-              .agg(F.count(F.lit(1)).alias("miss")))
-    return (fin.join(truth, "w").crossJoin(F.broadcast(tot))
-            .crossJoin(F.broadcast(missed))
-            .select(F.col("w").alias("word"),
-                    F.col("est").cast("long").alias("est"),
-                    F.col("cnt").cast("long").alias("true_cnt"),
-                    F.col("n").cast("long").alias("n"),
-                    F.expr("n div 9").cast("long").alias("err_bound"),
-                    (F.col("est") <= F.col("cnt"))
-                    .alias("underestimate_ok"),
-                    (F.col("cnt") - F.col("est") <= F.expr("n div 9"))
-                    .alias("error_ok"),
-                    (F.col("miss") == 0).alias("no_missed_heavy"),
-                    F.lit(8).cast("int").alias("k")))
-
-
-_DBP_SQL = """
-WITH v AS (
-  SELECT epoch_us(ts) AS v,
-         row_number() OVER (ORDER BY event_id) - 1 AS i
-  FROM events
-), d AS (
-  SELECT i - 1 AS j, v - lag(v) OVER (ORDER BY i) AS d
-  FROM v QUALIFY lag(v) OVER (ORDER BY i) IS NOT NULL
-), blk AS (
-  SELECT j, d, j // 128 AS block,
-         (j % 128) // 32 AS mini,
-         min(d) OVER (PARTITION BY (j // 128)) AS mind
-  FROM d
-), adj AS (
-  SELECT j, block, block * 4 + mini AS mb, mind, d - mind AS a
-  FROM blk
-), mbs AS (
-  SELECT mb, block, min(mind) AS min_delta, count(*) AS n_deltas,
-         max(a) AS max_adj,
-         CASE WHEN max(a) = 0 THEN 0 ELSE length(bin(max(a))) END AS bw
-  FROM adj GROUP BY mb, block
-), blocks AS (
-  SELECT block, min(min_delta) AS mind FROM mbs GROUP BY block
-), consts AS (
-  SELECT (SELECT count(*) FROM v) AS n_values,
-         (SELECT 8 * count(*) FROM v) AS plain_bytes,
-         (SELECT min(v) FILTER (WHERE i = 0) FROM v) AS v0,
-         (SELECT max(v) FILTER (
-            WHERE i = (SELECT max(i) FROM v)) FROM v) AS vl,
-         (SELECT sum(mind * cnt) FROM (
-            SELECT block, min(mind) AS mind, count(*) AS cnt
-            FROM blk GROUP BY block)) AS sum_mind,
-         (SELECT sum(a) FROM adj) AS sum_adj
-), enc AS (
-  SELECT 2 + 1
-         + (length(bin(GREATEST(c.n_values, 1))) + 6) // 7
-         + (length(bin(GREATEST(CASE WHEN c.v0 >= 0 THEN 2 * c.v0
-                       ELSE -2 * c.v0 - 1 END, 1))) + 6) // 7
-         + (SELECT sum((length(bin(GREATEST(
-               CASE WHEN b.mind >= 0 THEN 2 * b.mind
-               ELSE -2 * b.mind - 1 END, 1))) + 6) // 7 + 4)
-            FROM blocks b)
-         + (SELECT sum(4 * bw) FROM mbs) AS encoded_bytes
-  FROM consts c
-)
-SELECT CAST(m.mb AS BIGINT) AS mb_idx,
-       CAST(m.block AS BIGINT) AS block_idx,
-       CAST(m.n_deltas AS BIGINT) AS n_deltas,
-       CAST(m.min_delta AS BIGINT) AS min_delta,
-       CAST(m.max_adj AS BIGINT) AS max_adj,
-       CAST(m.bw AS INTEGER) AS bit_width,
-       CAST(4 * m.bw AS BIGINT) AS packed_bytes,
-       (m.max_adj < (CAST(1 AS BIGINT) << m.bw)
-        AND (m.bw = 0 OR m.max_adj >= (CAST(1 AS BIGINT) << (m.bw - 1))))
-       AS width_ok,
-       CAST(c.n_values AS BIGINT) AS n_values,
-       CAST(c.plain_bytes AS BIGINT) AS plain_bytes,
-       CAST(e.encoded_bytes AS BIGINT) AS encoded_bytes,
-       c.sum_mind + c.sum_adj = c.vl - c.v0 AS decode_ok
-FROM mbs m CROSS JOIN consts c CROSS JOIN enc e
-"""
-
-
-@register("q_events_delta_binpacked", _DBP_SQL)
-def q_events_delta_binpacked(spark, sf_dir):
-    """Parquet DELTA_BINARY_PACKED (spec: block 128, 4 miniblocks of 32)
-    over the event-timestamp column in write order — the actual encoding
-    layout a columnar writer would produce for this table: per-block
-    min-delta (negative deltas handled exactly as the spec does), per-
-    miniblock bit width from the max adjusted delta via exact binary-
-    length bit math, zigzag-varint byte counts for the header, first
-    value and each block's min-delta, and 4·bw packed bytes per
-    miniblock (the spec pads partial miniblocks to 32 values). Two pins:
-    width minimality/sufficiency per miniblock (max_adj < 2^bw and,
-    unless bw=0, ≥ 2^(bw−1)) and a global decode audit — the block-
-    weighted min-delta mass plus all adjusted deltas must reconstruct
-    v_last − v_first exactly. The single global ordering window is the
-    row-group frame (per-file at scale, one writer per partition — this
-    table is one row group); everything else is per-block/miniblock
-    grouping, map-side after the lag."""
-    e = _t(spark, sf_dir, "events")
-    v = e.select(F.expr("unix_micros(cast(ts as timestamp))").alias("v"),
-                 (F.row_number().over(Window.orderBy("event_id")) - 1)
-                 .alias("i"))
-    wo = Window.orderBy("i")
-    d = (v.select((F.col("i") - 1).alias("j"),
-                  (F.col("v") - F.lag("v").over(wo)).alias("d"),
-                  F.col("v"), F.col("i"))
-         .filter(F.col("j") >= 0))
-    blk = d.select(
-        "j", "d", F.expr("j div 128").alias("block"),
-        F.expr("(j % 128) div 32").alias("mini"),
-        F.min("d").over(Window.partitionBy(F.expr("j div 128")))
-        .alias("mind"))
-    adj = blk.select("j", "block",
-                     (F.col("block") * 4 + F.col("mini")).alias("mb"),
-                     "mind", (F.col("d") - F.col("mind")).alias("a"))
-    mbs = (adj.groupBy("mb", "block")
-           .agg(F.min("mind").alias("min_delta"),
-                F.count(F.lit(1)).alias("n_deltas"),
-                F.max("a").alias("max_adj"))
-           .withColumn("bw", F.when(F.col("max_adj") == 0, 0)
-                       .otherwise(F.length(F.bin("max_adj")))))
-    blocks = adj.groupBy("block").agg(F.min("mind").alias("mind"),
-                                      F.count(F.lit(1)).alias("cnt"))
-    vz = F.when(F.col("v0") >= 0, 2 * F.col("v0")) \
-        .otherwise(-2 * F.col("v0") - 1)
-    consts = (v.agg(F.count(F.lit(1)).alias("n_values"),
-                    (8 * F.count(F.lit(1))).alias("plain_bytes"),
-                    F.min_by("v", "i").alias("v0"),
-                    F.max_by("v", "i").alias("vl"))
-              .crossJoin(blocks.agg(
-                  F.sum(F.col("mind") * F.col("cnt")).alias("sum_mind")))
-              .crossJoin(adj.agg(F.sum("a").alias("sum_adj"))))
-    vlen = lambda c: (F.length(F.bin(F.greatest(c, F.lit(1)))) + 6) / 7  # noqa: E731
-    hdr = (consts.select(
-        (F.lit(3) + F.floor(vlen(F.col("n_values")))
-         + F.floor(vlen(vz))).alias("hdr_bytes")))
-    blk_bytes = blocks.select(
-        F.when(F.col("mind") >= 0, 2 * F.col("mind"))
-        .otherwise(-2 * F.col("mind") - 1).alias("zz")) \
-        .agg(F.sum(F.floor((F.length(F.bin(F.greatest(
-            F.col("zz"), F.lit(1)))) + 6) / 7) + 4).alias("blk_bytes"))
-    mb_bytes = mbs.agg(F.sum(4 * F.col("bw")).alias("mb_bytes"))
-    enc = (hdr.crossJoin(blk_bytes).crossJoin(mb_bytes)
-           .select((F.col("hdr_bytes") + F.col("blk_bytes")
-                    + F.col("mb_bytes")).alias("encoded_bytes")))
-    two = lambda c: F.expr(f"shiftleft(CAST(1 AS BIGINT), {c})")  # noqa: E731
-    return (mbs.crossJoin(F.broadcast(consts)).crossJoin(F.broadcast(enc))
-            .select(
-                F.col("mb").cast("long").alias("mb_idx"),
-                F.col("block").cast("long").alias("block_idx"),
-                F.col("n_deltas").cast("long").alias("n_deltas"),
-                F.col("min_delta").cast("long").alias("min_delta"),
-                F.col("max_adj").cast("long").alias("max_adj"),
-                F.col("bw").cast("int").alias("bit_width"),
-                (4 * F.col("bw")).cast("long").alias("packed_bytes"),
-                ((F.col("max_adj") < two("bw"))
-                 & ((F.col("bw") == 0)
-                    | (F.col("max_adj") >= two("bw - 1"))))
-                .alias("width_ok"),
-                F.col("n_values").cast("long").alias("n_values"),
-                F.col("plain_bytes").cast("long").alias("plain_bytes"),
-                F.col("encoded_bytes").cast("long").alias("encoded_bytes"),
-                (F.col("sum_mind") + F.col("sum_adj")
-                 == F.col("vl") - F.col("v0")).alias("decode_ok")))
 
 
 _AES_SQL = """
@@ -41594,2075 +8025,6 @@ def data_weighted_reservoir(spark, sf_dir):
                     F.col("n_docs").cast("long").alias("n_docs"),
                     (F.col("pr_e6") >= F.col("tau_e6"))
                     .alias("above_tau")))
-
-
-_FENWICK_SQL = """
-WITH days AS (
-  SELECT CAST(dense_rank() OVER (ORDER BY d) AS BIGINT) AS i,
-         c
-  FROM (SELECT CAST(ts AS DATE) AS d, count(*) AS c
-        FROM events GROUP BY 1)
-), px AS (
-  SELECT i, c, sum(c) OVER (ORDER BY i) AS prefix,
-         i - (i & (i - 1)) AS lb
-  FROM days
-), bit AS (
-  SELECT p.i, p.c, p.prefix, p.lb,
-         p.prefix - coalesce(q.prefix, 0) AS b
-  FROM px p LEFT JOIN px q ON q.i = p.i - p.lb
-), bd AS (
-  SELECT b.i, sum(d2.c) AS b_direct
-  FROM bit b JOIN days d2 ON d2.i > b.i - b.lb AND d2.i <= b.i
-  GROUP BY b.i
-), probes AS (
-  SELECT q,
-         sum(CASE WHEN t.i = q - (q % t.lb) THEN t.b ELSE 0 END) AS psum,
-         sum(CASE WHEN t.i = q - (q % t.lb) THEN 1 ELSE 0 END) AS pnodes
-  FROM (VALUES (5), (17), (23), (30)) v(q), bit t
-  GROUP BY q
-), pchk AS (
-  SELECT p.q, p.psum, p.pnodes,
-         p.psum = x.prefix AS sum_ok,
-         p.pnodes = bit_count(CAST(p.q AS BIGINT)) AS nodes_ok
-  FROM probes p JOIN px x ON x.i = p.q
-)
-SELECT CAST(t.i AS BIGINT) AS i, CAST(t.c AS BIGINT) AS c,
-       CAST(t.prefix AS BIGINT) AS prefix,
-       CAST(t.lb AS BIGINT) AS lowbit,
-       CAST(t.b AS BIGINT) AS b,
-       CAST(d.b_direct AS BIGINT) AS b_direct,
-       t.b = d.b_direct AS b_ok,
-       CAST(bit_count(CAST(t.i AS BIGINT)) AS INTEGER) AS bits,
-       (SELECT CAST(psum AS BIGINT) FROM pchk WHERE q = 5) AS p5_sum,
-       (SELECT sum_ok AND nodes_ok FROM pchk WHERE q = 5) AS p5_ok,
-       (SELECT CAST(psum AS BIGINT) FROM pchk WHERE q = 17) AS p17_sum,
-       (SELECT sum_ok AND nodes_ok FROM pchk WHERE q = 17) AS p17_ok,
-       (SELECT CAST(psum AS BIGINT) FROM pchk WHERE q = 23) AS p23_sum,
-       (SELECT sum_ok AND nodes_ok FROM pchk WHERE q = 23) AS p23_ok,
-       (SELECT CAST(psum AS BIGINT) FROM pchk WHERE q = 30) AS p30_sum,
-       (SELECT sum_ok AND nodes_ok FROM pchk WHERE q = 30) AS p30_ok
-FROM bit t JOIN bd d ON d.i = t.i
-"""
-
-
-@register("q_events_fenwick_tree", _FENWICK_SQL)
-def q_events_fenwick_tree(spark, sf_dir):
-    """Fenwick / binary-indexed tree over the daily event counts, built
-    WITHOUT any sequential pass: cell b_i = prefix(i) − prefix(i −
-    lowbit(i)) (lowbit via i − (i & (i−1)), no negative-AND semantics
-    to disagree on), then independently re-derived as a range join over
-    the raw days it covers — b_ok pins the two derivations equal. Prefix
-    queries at 4 probe positions use the closed-form chain-membership
-    test n = q − (q mod lowbit(n)) — the node set a sequential
-    lowbit-stripping walk would visit, recognized ARITHMETICALLY so the
-    whole decomposition is one conditional aggregate, no loop — with
-    both classic BIT theorems pinned: the decomposed sum equals the
-    direct prefix sum, and the node count equals popcount(q). The day
-    axis is bounded (~366); the counts underneath are one map-side-
-    combinable aggregate, so the structure scales as a partition-stats
-    index exactly like parquet row-group min/max trees."""
-    e = _t(spark, sf_dir, "events")
-    days = (e.groupBy(F.col("ts").cast("date").alias("d"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .select(F.dense_rank().over(Window.orderBy("d"))
-                    .cast("long").alias("i"), "c"))
-    px = days.select(
-        "i", "c", F.sum("c").over(Window.orderBy("i")).alias("prefix"),
-        F.expr("i - (i & (i - 1))").alias("lb"))
-    bit = (px.alias("p")
-           .join(px.select(F.col("i").alias("qi"),
-                           F.col("prefix").alias("qprefix")).alias("q"),
-                 F.expr("qi = i - lb"), "left")
-           .select("i", "c", "prefix", "lb",
-                   (F.col("prefix") - F.coalesce(F.col("qprefix"),
-                                                 F.lit(0))).alias("b")))
-    bd = (bit.alias("b")
-          .join(days.select(F.col("i").alias("di"),
-                            F.col("c").alias("dc")).alias("d2"),
-                F.expr("di > i - lb AND di <= i"))
-          .groupBy("i").agg(F.sum("dc").alias("b_direct")))
-    probes = spark.createDataFrame([(5,), (17,), (23,), (30,)], "q long")
-    pr = (probes.crossJoin(bit)
-          .groupBy("q")
-          .agg(F.sum(F.when(F.expr("i = q - (q % lb)"), F.col("b"))
-                     .otherwise(0)).alias("psum"),
-               F.sum(F.when(F.expr("i = q - (q % lb)"), F.lit(1))
-                     .otherwise(0)).alias("pnodes")))
-    pchk = (pr.join(px.select(F.col("i").alias("q"),
-                              F.col("prefix").alias("qpfx")), "q")
-            .select("q", "psum", "pnodes",
-                    (F.col("psum") == F.col("qpfx")).alias("sum_ok"),
-                    (F.col("pnodes") == F.bit_count(F.col("q")))
-                    .alias("nodes_ok")))
-    aggs = []
-    for q in (5, 17, 23, 30):
-        aggs.append(F.max(F.when(F.col("q") == q, F.col("psum")))
-                    .cast("long").alias(f"p{q}_sum"))
-        aggs.append(F.max(F.when(F.col("q") == q,
-                                 F.col("sum_ok") & F.col("nodes_ok")))
-                    .alias(f"p{q}_ok"))
-    pvt = pchk.agg(*aggs)
-    out = bit.join(bd, "i").crossJoin(F.broadcast(pvt))
-    return out.select(
-        F.col("i").cast("long"), F.col("c").cast("long").alias("c"),
-        F.col("prefix").cast("long").alias("prefix"),
-        F.col("lb").cast("long").alias("lowbit"),
-        F.col("b").cast("long").alias("b"),
-        F.col("b_direct").cast("long").alias("b_direct"),
-        (F.col("b") == F.col("b_direct")).alias("b_ok"),
-        F.bit_count("i").cast("int").alias("bits"),
-        "p5_sum", "p5_ok", "p17_sum", "p17_ok",
-        "p23_sum", "p23_ok", "p30_sum", "p30_ok")
-
-
-_CACHE_SQL = """
-WITH RECURSIVE acc AS (
-  SELECT row_number() OVER (ORDER BY event_id) AS p, item
-  FROM (SELECT event_id, user_id AS item
-        FROM events ORDER BY event_id LIMIT 300)
-), nx AS (
-  SELECT p, item,
-         coalesce(lead(p) OVER (PARTITION BY item ORDER BY p),
-                  1000000000 + item) AS nu
-  FROM acc
-), st AS (
-  SELECT 0 AS t, CAST(0 AS BIGINT) AS x,
-         false AS lru_hit, false AS opt_hit,
-         CAST(0 AS BIGINT) AS lh, CAST(0 AS BIGINT) AS oh,
-         CAST([] AS BIGINT[]) AS lru,
-         CAST([] AS STRUCT(x BIGINT, nu BIGINT)[]) AS opt,
-         (SELECT list(item ORDER BY p) FROM acc) AS xs,
-         (SELECT list(nu ORDER BY p) FROM nx) AS nxt
-  UNION ALL
-  SELECT s.t + 1, t0.x, t1.lhit, t2.ohit,
-         s.lh + CASE WHEN t1.lhit THEN 1 ELSE 0 END,
-         s.oh + CASE WHEN t2.ohit THEN 1 ELSE 0 END,
-         t1.nlru, t3.nopt, s.xs, s.nxt
-  FROM st s
-  CROSS JOIN LATERAL (
-    SELECT s.xs[CAST(s.t + 1 AS INTEGER)] AS x,
-           s.nxt[CAST(s.t + 1 AS INTEGER)] AS nu) t0
-  CROSS JOIN LATERAL (
-    SELECT list_contains(s.lru, t0.x) AS lhit,
-           (CASE WHEN list_contains(s.lru, t0.x)
-            THEN [t0.x] || list_filter(s.lru, y -> y <> t0.x)
-            ELSE ([t0.x] || s.lru)[1:8] END) AS nlru) t1
-  CROSS JOIN LATERAL (
-    SELECT len(list_filter(s.opt, e -> e.x = t0.x)) > 0 AS ohit) t2
-  CROSS JOIN LATERAL (
-    SELECT CASE
-      WHEN t2.ohit THEN
-        list_transform(s.opt, e -> CASE WHEN e.x = t0.x
-          THEN struct_pack(x := t0.x, nu := t0.nu) ELSE e END)
-      WHEN len(s.opt) < 8 THEN
-        s.opt || [struct_pack(x := t0.x, nu := t0.nu)]
-      ELSE
-        list_filter(s.opt, e -> e.nu <>
-          list_max(list_transform(s.opt, q -> q.nu)))
-        || [struct_pack(x := t0.x, nu := t0.nu)]
-      END AS nopt) t3
-  WHERE s.t < 300
-), fin AS (
-  SELECT lh AS flh, oh AS foh FROM st WHERE t = 300
-)
-SELECT CAST(s.t AS INTEGER) AS i, s.x AS item, s.lru_hit, s.opt_hit,
-       s.lh AS lru_hits, s.oh AS opt_hits,
-       (SELECT foh >= flh FROM fin) AS opt_ge_lru,
-       CAST(8 AS INTEGER) AS cache_size,
-       CAST((SELECT flh FROM fin) AS BIGINT) AS lru_total,
-       CAST((SELECT foh FROM fin) AS BIGINT) AS opt_total
-FROM st s WHERE s.t >= 1
-"""
-
-
-@register("q_events_cache_replacement", _CACHE_SQL)
-def q_events_cache_replacement(spark, sf_dir):
-    """LRU versus Belady's OPT (MIN) on the first 300 user accesses with
-    a size-8 cache — the cache-replacement duel every buffer-pool and
-    shuffle-fetch cache design starts from. LRU is the classic
-    move-to-front list; OPT evicts the resident item whose NEXT use is
-    farthest in the future, implemented with the standard pointer trick:
-    next-use positions are precomputed as one lead() window (position
-    of the item's next access, unique by construction; ∞ encoded as
-    10⁹+item so even never-again items evict deterministically), and
-    each cache entry carries its own next-use pointer which is simply
-    refreshed on access — no rescanning of the future at any step. The
-    full per-step trajectory is emitted (hits, running counts, one
-    wrong eviction anywhere shifts every later hit) with Belady's
-    optimality theorem pinned on every row: OPT's final hit count ≥
-    LRU's. Engine: bounded driver replay; oracle: identical recursion
-    carrying both cache states as lists."""
-    C = 8
-    rows = (_t(spark, sf_dir, "events").orderBy("event_id").limit(300)
-            .select(F.col("user_id").alias("item")).collect())
-    xs = [r["item"] for r in rows]
-    last_pos: dict = {}
-    nxt = [0] * len(xs)
-    for p in range(len(xs) - 1, -1, -1):
-        nxt[p] = last_pos.get(xs[p], 1000000000 + xs[p])
-        last_pos[xs[p]] = p + 1
-    lru: list = []
-    opt: list = []  # [item, next_use]
-    lh = oh = 0
-    out = []
-    for t, x in enumerate(xs, start=1):
-        nu = nxt[t - 1]
-        lhit = x in lru
-        if lhit:
-            lru = [x] + [y for y in lru if y != x]
-        else:
-            lru = ([x] + lru)[:C]
-        ohit = any(e[0] == x for e in opt)
-        if ohit:
-            opt = [[x, nu] if e[0] == x else e for e in opt]
-        elif len(opt) < C:
-            opt = opt + [[x, nu]]
-        else:
-            mx = max(e[1] for e in opt)
-            opt = [e for e in opt if e[1] != mx] + [[x, nu]]
-        lh += lhit
-        oh += ohit
-        out.append((t, x, lhit, ohit, lh, oh))
-    return spark.createDataFrame(
-        [(t, x, lht, oht, a, b, oh >= lh, C, lh, oh)
-         for t, x, lht, oht, a, b in out],
-        "i int, item long, lru_hit boolean, opt_hit boolean,"
-        " lru_hits long, opt_hits long, opt_ge_lru boolean,"
-        " cache_size int, lru_total long, opt_total long")
-
-
-_ROARING_SQL = """
-WITH ids AS (
-  SELECT event_type AS lst, event_id AS x FROM events
-), ch AS (
-  SELECT lst, x, x // 65536 AS chunk, x % 65536 AS low,
-         CASE WHEN lag(x) OVER (PARTITION BY lst, x // 65536
-                                ORDER BY x) = x - 1
-              THEN 0 ELSE 1 END AS run_start
-  FROM ids
-), co AS (
-  SELECT lst, chunk, count(*) AS n, sum(run_start) AS runs
-  FROM ch GROUP BY lst, chunk
-), sz AS (
-  SELECT lst, chunk, n, runs,
-         8 + 2 * n AS array_bytes,
-         8 + 8192 AS bitmap_bytes,
-         8 + 2 + 4 * runs AS run_bytes
-  FROM co
-), pick AS (
-  SELECT lst, chunk, n, runs, array_bytes, bitmap_bytes, run_bytes,
-         CASE
-           WHEN n <= 4096 AND array_bytes <= run_bytes THEN 'array'
-           WHEN run_bytes < bitmap_bytes
-                AND (n > 4096 OR run_bytes < array_bytes) THEN 'run'
-           ELSE 'bitmap' END AS container
-  FROM sz
-), tot AS (
-  SELECT sum(CASE container WHEN 'array' THEN array_bytes
-             WHEN 'run' THEN run_bytes ELSE bitmap_bytes END)
-         AS total_bytes,
-         sum(4 * n) AS plain_bytes
-  FROM pick
-)
-SELECT p.lst AS list_id, CAST(p.chunk AS BIGINT) AS chunk,
-       CAST(p.n AS BIGINT) AS n, CAST(p.runs AS BIGINT) AS runs,
-       CAST(p.array_bytes AS BIGINT) AS array_bytes,
-       CAST(p.bitmap_bytes AS BIGINT) AS bitmap_bytes,
-       CAST(p.run_bytes AS BIGINT) AS run_bytes,
-       p.container,
-       CAST(CASE p.container WHEN 'array' THEN p.array_bytes
-            WHEN 'run' THEN p.run_bytes
-            ELSE p.bitmap_bytes END AS BIGINT) AS chosen_bytes,
-       (CASE p.container WHEN 'array' THEN p.array_bytes
-        WHEN 'run' THEN p.run_bytes ELSE p.bitmap_bytes END)
-       <= least(CASE WHEN p.n <= 4096 THEN p.array_bytes
-                ELSE p.bitmap_bytes END, p.bitmap_bytes, p.run_bytes)
-       AS minimal_ok,
-       CAST(t.total_bytes AS BIGINT) AS total_bytes,
-       CAST(t.plain_bytes AS BIGINT) AS plain_bytes
-FROM pick p CROSS JOIN tot t
-"""
-
-
-@register("search_roaring_layout", _ROARING_SQL)
-def search_roaring_layout(spark, sf_dir):
-    """Roaring-bitmap container layout for the per-type event-id sets —
-    the compressed-bitmap format behind Lucene/Druid/ClickHouse filter
-    indexes: ids split into 2¹⁶-value chunks, each chunk choosing among
-    an array container (2 bytes/id, only legal ≤ 4096 ids), a fixed 8 KiB
-    bitmap, or a run container (4 bytes/run, runs counted exactly via
-    one lag window detecting x−1 gaps) — the genuine Roaring decision
-    rule, with the chosen container's minimality over the legal
-    alternatives pinned per chunk and corpus totals against plain 4-byte
-    ids riding every row. The selectivity regimes flip the decision by
-    scale: sparse per-type chunks pick arrays at small corpora and the
-    dense interleaved chunks at sf0.1 flip to bitmaps (interleaving
-    shatters runs, so run containers lose exactly as they do in
-    production). All grouping + window arithmetic, fully distributed by
-    (list, chunk) — the same key a sharded index builder partitions by."""
-    e = _t(spark, sf_dir, "events")
-    ch = (e.select(F.col("event_type").alias("lst"),
-                   F.col("event_id").alias("x"))
-          .withColumn("chunk", F.expr("x div 65536"))
-          .withColumn("run_start", F.when(
-              F.lag("x").over(Window.partitionBy("lst", "chunk")
-                              .orderBy("x")) == F.col("x") - 1, 0)
-              .otherwise(1)))
-    co = (ch.groupBy("lst", "chunk")
-          .agg(F.count(F.lit(1)).alias("n"),
-               F.sum("run_start").alias("runs")))
-    sz = (co.withColumn("array_bytes", 8 + 2 * F.col("n"))
-          .withColumn("bitmap_bytes", F.lit(8 + 8192))
-          .withColumn("run_bytes", 8 + 2 + 4 * F.col("runs")))
-    pick = sz.withColumn("container", F.when(
-        (F.col("n") <= 4096) & (F.col("array_bytes")
-                                <= F.col("run_bytes")), "array")
-        .when((F.col("run_bytes") < F.col("bitmap_bytes"))
-              & ((F.col("n") > 4096)
-                 | (F.col("run_bytes") < F.col("array_bytes"))), "run")
-        .otherwise("bitmap"))
-    chosen = (F.when(F.col("container") == "array", F.col("array_bytes"))
-              .when(F.col("container") == "run", F.col("run_bytes"))
-              .otherwise(F.col("bitmap_bytes")))
-    tot = pick.agg(F.sum(chosen).alias("total_bytes"),
-                   F.sum(4 * F.col("n")).alias("plain_bytes"))
-    return (pick.crossJoin(F.broadcast(tot))
-            .select(F.col("lst").alias("list_id"),
-                    F.col("chunk").cast("long").alias("chunk"),
-                    F.col("n").cast("long").alias("n"),
-                    F.col("runs").cast("long").alias("runs"),
-                    F.col("array_bytes").cast("long").alias("array_bytes"),
-                    F.col("bitmap_bytes").cast("long")
-                    .alias("bitmap_bytes"),
-                    F.col("run_bytes").cast("long").alias("run_bytes"),
-                    "container",
-                    chosen.cast("long").alias("chosen_bytes"),
-                    (chosen <= F.least(
-                        F.when(F.col("n") <= 4096, F.col("array_bytes"))
-                        .otherwise(F.col("bitmap_bytes")),
-                        F.col("bitmap_bytes"), F.col("run_bytes")))
-                    .alias("minimal_ok"),
-                    F.col("total_bytes").cast("long").alias("total_bytes"),
-                    F.col("plain_bytes").cast("long")
-                    .alias("plain_bytes")))
-
-
-_DGIM_SQL = """
-WITH RECURSIVE bits AS (
-  SELECT row_number() OVER (ORDER BY event_id) AS p,
-         CASE WHEN value >= 50 THEN 1 ELSE 0 END AS b
-  FROM events
-), nn AS (
-  SELECT max(p) AS n, sum(b) AS m FROM bits
-), dig AS (
-  SELECT 0 AS j, CAST((SELECT m FROM nn) AS BIGINT) AS mj,
-         CAST(0 AS BIGINT) AS d, CAST(0 AS BIGINT) AS c
-  UNION ALL
-  SELECT j + 1, (mj - (2 - mj % 2)) // 2,
-         2 - mj % 2,
-         c + (2 - mj % 2) * (CAST(1 AS BIGINT) << j)
-  FROM dig WHERE mj > 0
-), lev AS (
-  SELECT j - 1 AS j, d, c, c - d * (CAST(1 AS BIGINT) << (j - 1)) AS c0
-  FROM dig WHERE j > 0
-), ones AS (
-  SELECT p, row_number() OVER (ORDER BY p DESC) AS r
-  FROM bits WHERE b = 1
-), asg AS (
-  SELECT o.p, o.r, l.j,
-         (o.r - l.c0 - 1) // (CAST(1 AS BIGINT) << l.j) AS k
-  FROM ones o JOIN lev l ON o.r > l.c0 AND o.r <= l.c
-), bk AS (
-  SELECT j, k, CAST(1 AS BIGINT) << j AS size,
-         max(p) AS ts, min(p) AS oldest_p,
-         min(r) AS newest_rank, max(r) AS oldest_rank
-  FROM asg GROUP BY j, k
-), probes AS (
-  SELECT wd.wl AS w,
-         coalesce(2 * sum(b2.size), 0)
-         - coalesce(min_by(b2.size, b2.ts), 0) AS est2,
-         (SELECT count(*) FROM ones o2
-          WHERE o2.p > (SELECT n FROM nn) - wd.wl) AS exact
-  FROM (SELECT (SELECT n FROM nn) // 10 AS wl UNION ALL
-        SELECT (SELECT n FROM nn) // 4 UNION ALL
-        SELECT (SELECT n FROM nn) // 2 UNION ALL
-        SELECT (SELECT n FROM nn)) wd
-  LEFT JOIN bk b2 ON b2.ts > (SELECT n FROM nn) - wd.wl
-  GROUP BY wd.wl
-)
-SELECT CAST(bk.j AS INTEGER) AS level, CAST(bk.k AS BIGINT) AS bucket,
-       CAST(bk.size AS BIGINT) AS size, CAST(bk.ts AS BIGINT) AS ts,
-       CAST(bk.newest_rank AS BIGINT) AS newest_rank,
-       CAST(bk.oldest_rank AS BIGINT) AS oldest_rank,
-       bk.oldest_rank - bk.newest_rank + 1 = bk.size AS span_ok,
-       CAST((SELECT m FROM nn) AS BIGINT) AS m_ones,
-       CAST((SELECT n FROM nn) AS BIGINT) AS n_bits,
-       (SELECT CAST(est2 AS BIGINT) FROM probes
-        WHERE w = (SELECT n FROM nn) // 10) AS w10_est2,
-       (SELECT CAST(exact AS BIGINT) FROM probes
-        WHERE w = (SELECT n FROM nn) // 10) AS w10_exact,
-       (SELECT abs(est2 - 2 * exact) <= exact + 1 FROM probes
-        WHERE w = (SELECT n FROM nn) // 10) AS w10_ok,
-       (SELECT CAST(est2 AS BIGINT) FROM probes
-        WHERE w = (SELECT n FROM nn) // 4) AS w4_est2,
-       (SELECT CAST(exact AS BIGINT) FROM probes
-        WHERE w = (SELECT n FROM nn) // 4) AS w4_exact,
-       (SELECT abs(est2 - 2 * exact) <= exact + 1 FROM probes
-        WHERE w = (SELECT n FROM nn) // 4) AS w4_ok,
-       (SELECT CAST(est2 AS BIGINT) FROM probes
-        WHERE w = (SELECT n FROM nn) // 2) AS w2_est2,
-       (SELECT CAST(exact AS BIGINT) FROM probes
-        WHERE w = (SELECT n FROM nn) // 2) AS w2_exact,
-       (SELECT abs(est2 - 2 * exact) <= exact + 1 FROM probes
-        WHERE w = (SELECT n FROM nn) // 2) AS w2_ok,
-       (SELECT CAST(est2 AS BIGINT) FROM probes
-        WHERE w = (SELECT n FROM nn)) AS w1_est2,
-       (SELECT CAST(exact AS BIGINT) FROM probes
-        WHERE w = (SELECT n FROM nn)) AS w1_exact,
-       (SELECT abs(est2 - 2 * exact) <= exact + 1 FROM probes
-        WHERE w = (SELECT n FROM nn)) AS w1_ok
-FROM bk
-"""
-
-
-@register("sketch_dgim_window", _DGIM_SQL)
-def sketch_dgim_window(spark, sf_dir):
-    """DGIM sliding-window bit counting (Datar-Gionis-Indyk-Motwani)
-    over the value≥50 indicator stream — WITHOUT replaying the bucket
-    cascade: the lazy-increment redundant binary counter DGIM maintains
-    has a canonical closed form (d_j = 2 − (m_j mod 2), m_{j+1} =
-    (m_j − d_j)/2 — at most two buckets per power-of-two size), so each
-    one-bit's bucket is computed ARITHMETICALLY from its recency rank
-    against the level spans, and the bucket timestamp is just a per-
-    bucket max — groupBy + windows end to end, the form a streaming
-    executor would actually maintain per partition. Per bucket the
-    recency span exactly equals its size (span_ok pinned — buckets
-    partition the ones contiguously). Four window probes (N/10, N/4,
-    N/2, N) answer with the classic rule — full buckets plus HALF the
-    straddling oldest, kept integer as est2 = 2·Σsize − oldest_size —
-    and the DGIM error theorem |est − exact| ≤ (exact+1)/2 is pinned
-    per probe in cross-multiplied integer form. The cascade-equivalence
-    of the closed form is verified against a literal bucket-merging
-    simulation in tests."""
-    e = _t(spark, sf_dir, "events")
-    bits = e.select(
-        F.row_number().over(Window.orderBy("event_id")).alias("p"),
-        F.when(F.col("value") >= 50, 1).otherwise(0).alias("b"))
-    nn = bits.agg(F.max("p").alias("n"), F.sum("b").alias("m"))
-    nrow = nn.collect()[0]
-    n, m = int(nrow["n"]), int(nrow["m"])
-    # canonical lazy-counter digits: metadata-scale (<= 64 levels)
-    levs, mj, j, c0 = [], m, 0, 0
-    while mj > 0:
-        d = 2 - mj % 2
-        c = c0 + d * (1 << j)
-        levs.append((j, d, c0, c))
-        mj = (mj - d) // 2
-        j += 1
-        c0 = c
-    lev = spark.createDataFrame(
-        [(j, d, c0, c) for j, d, c0, c in levs],
-        "j int, d long, c0 long, c long")
-    ones = (bits.filter(F.col("b") == 1)
-            .select("p", F.row_number().over(Window.orderBy(F.desc("p")))
-                    .alias("r")))
-    asg = (ones.join(F.broadcast(lev),
-                     (F.col("r") > F.col("c0")) & (F.col("r") <= F.col("c")))
-           .select("p", "r", "j",
-                   F.expr("(r - c0 - 1) div shiftleft(CAST(1 AS BIGINT), j)")
-                   .alias("k")))
-    exacts = asg.agg(*[
-        F.sum(F.when(F.col("p") > n - w, 1).otherwise(0)).alias(tag)
-        for tag, w in (("w10", n // 10), ("w4", n // 4),
-                       ("w2", n // 2), ("w1", n))])
-    bk = (asg.groupBy("j", "k")
-          .agg(F.expr("shiftleft(CAST(1 AS BIGINT), j)").alias("size"),
-               F.max("p").alias("ts"),
-               F.min("r").alias("newest_rank"),
-               F.max("r").alias("oldest_rank")).collect())
-    ex = exacts.collect()[0]
-    rows = []
-    for tag, w in (("w10", n // 10), ("w4", n // 4),
-                   ("w2", n // 2), ("w1", n)):
-        inw = [b for b in bk if b["ts"] > n - w]
-        s2 = 2 * sum(b["size"] for b in inw)
-        old = min(inw, key=lambda b: b["ts"])["size"] if inw else 0
-        est2 = s2 - old
-        exact = int(ex[tag])
-        rows.append((est2, exact, abs(est2 - 2 * exact) <= exact + 1))
-    (w10, w4, w2, w1) = rows
-    return spark.createDataFrame(
-        [(int(b["j"]), int(b["k"]), int(b["size"]), int(b["ts"]),
-          int(b["newest_rank"]), int(b["oldest_rank"]),
-          b["oldest_rank"] - b["newest_rank"] + 1 == b["size"], m, n,
-          w10[0], w10[1], w10[2], w4[0], w4[1], w4[2],
-          w2[0], w2[1], w2[2], w1[0], w1[1], w1[2]) for b in bk],
-        "level int, bucket long, size long, ts long, newest_rank long,"
-        " oldest_rank long, span_ok boolean, m_ones long, n_bits long,"
-        " w10_est2 long, w10_exact long, w10_ok boolean,"
-        " w4_est2 long, w4_exact long, w4_ok boolean,"
-        " w2_est2 long, w2_exact long, w2_ok boolean,"
-        " w1_est2 long, w1_exact long, w1_ok boolean")
-
-
-_RLEH_SQL = """
-WITH codes AS (
-  SELECT 'type' AS stream, 3 AS bw,
-         row_number() OVER (ORDER BY event_id) AS p,
-         CASE event_type WHEN 'click' THEN 0 WHEN 'error' THEN 1
-           WHEN 'purchase' THEN 2 WHEN 'signup' THEN 3 ELSE 4 END AS v
-  FROM events
-  UNION ALL
-  SELECT 'day', 5, row_number() OVER (ORDER BY event_id),
-         dense_rank() OVER (ORDER BY CAST(ts AS DATE)) - 1
-  FROM events
-), brk AS (
-  SELECT stream, bw, p, v,
-         CASE WHEN lag(v) OVER (PARTITION BY stream ORDER BY p) = v
-              THEN 0 ELSE 1 END AS nb
-  FROM codes
-), isl AS (
-  SELECT stream, bw, p, v,
-         sum(nb) OVER (PARTITION BY stream ORDER BY p) AS island
-  FROM brk
-), runs AS (
-  SELECT stream, bw, island, min(p) AS start_p, count(*) AS len,
-         min(v) AS v, max(v) AS vmax
-  FROM isl GROUP BY stream, bw, island
-), cls AS (
-  SELECT stream, bw, island, start_p, len, v, vmax, len >= 8 AS is_rle,
-         sum(CASE WHEN len >= 8 THEN 1 ELSE 0 END)
-           OVER (PARTITION BY stream ORDER BY island) AS grp0
-  FROM runs
-), seg AS (
-  SELECT stream, bw,
-         CASE WHEN is_rle THEN 'rle' ELSE 'packed' END AS kind,
-         CASE WHEN is_rle THEN island ELSE -1 - (grp0) END AS segkey,
-         min(start_p) AS start_p, sum(len) AS n_values,
-         min(v) AS vmin, max(vmax) AS vmax
-  FROM cls GROUP BY 1, 2, 3, 4
-), szd AS (
-  SELECT stream, bw, kind, start_p, n_values, vmin, vmax,
-         CASE WHEN kind = 'rle' THEN
-           (length(bin(GREATEST(2 * n_values, 1))) + 6) // 7
-           + (bw + 7) // 8
-         ELSE
-           (length(bin(GREATEST(2 * ((n_values + 7) // 8) + 1, 1)))
-            + 6) // 7 + ((n_values + 7) // 8) * bw
-         END AS seg_bytes,
-         row_number() OVER (PARTITION BY stream ORDER BY start_p)
-           AS seg_idx
-  FROM seg
-), tot AS (
-  SELECT stream, sum(seg_bytes) AS total_bytes,
-         sum(n_values) AS n_total
-  FROM szd GROUP BY stream
-)
-SELECT s.stream, CAST(s.seg_idx AS BIGINT) AS seg_idx, s.kind,
-       CAST(s.start_p AS BIGINT) AS start_p,
-       CAST(s.n_values AS BIGINT) AS n_values,
-       CAST(s.vmin AS INTEGER) AS vmin, CAST(s.vmax AS INTEGER) AS vmax,
-       (s.kind = 'packed' OR s.vmin = s.vmax) AS rle_uniform_ok,
-       (s.kind = 'packed' OR s.n_values >= 8) AS rle_minlen_ok,
-       CAST(s.seg_bytes AS BIGINT) AS seg_bytes,
-       CAST(t.total_bytes AS BIGINT) AS total_bytes,
-       CAST(t.n_total AS BIGINT) AS plain_bytes,
-       t.total_bytes < t.n_total AS beats_plain
-FROM szd s JOIN tot t ON t.stream = s.stream
-"""
-
-
-@register("q_events_rle_hybrid", _RLEH_SQL)
-def q_events_rle_hybrid(spark, sf_dir):
-    """Parquet RLE/bit-packed hybrid encoding of the event-type
-    dictionary codes in write order — the format every dictionary-
-    encoded column and every definition-level stream in a parquet file
-    uses: value runs found by gaps-and-islands (one lag + one running
-    sum), runs ≥ 8 become RLE segments (varint(len<<1) + one value
-    byte for bw=3), shorter runs coalesce into bit-packed groups
-    (varint((groups<<1)|1) + 3 bytes per 8-value group, padded to
-    multiples of 8 exactly as the spec packs), with segment framing in
-    stream order. Pins per segment: RLE segments are value-uniform and
-    ≥ 8 long by construction, and the whole encoding beats plain
-    1-byte-per-code storage (5 interleaved types still pack 8 codes
-    into 3 bytes). Fully distributed window+group arithmetic — the
-    island key is the only global window, the same single-writer
-    row-group frame as the DELTA_BINARY_PACKED row."""
-    e = _t(spark, sf_dir, "events")
-    code = (F.when(F.col("event_type") == "click", 0)
-            .when(F.col("event_type") == "error", 1)
-            .when(F.col("event_type") == "purchase", 2)
-            .when(F.col("event_type") == "signup", 3).otherwise(4))
-    codes = (e.select(
-        F.lit("type").alias("stream"), F.lit(3).alias("bw"),
-        F.row_number().over(Window.orderBy("event_id")).alias("p"),
-        code.cast("long").alias("v"))
-        .union(e.select(
-            F.lit("day"), F.lit(5),
-            F.row_number().over(Window.orderBy("event_id")),
-            (F.dense_rank().over(
-                Window.orderBy(F.col("ts").cast("date"))) - 1)
-            .cast("long"))))
-    wo = Window.partitionBy("stream").orderBy("p")
-    isl = (codes.withColumn(
-        "nb", F.when(F.lag("v").over(wo) == F.col("v"), 0).otherwise(1))
-        .withColumn("island", F.sum("nb").over(wo)))
-    runs = (isl.groupBy("stream", "bw", "island")
-            .agg(F.min("p").alias("start_p"),
-                 F.count(F.lit(1)).alias("len"),
-                 F.min("v").alias("v"), F.max("v").alias("vmax")))
-    cls = runs.withColumn("is_rle", F.col("len") >= 8).withColumn(
-        "grp0", F.sum(F.when(F.col("len") >= 8, 1).otherwise(0))
-        .over(Window.partitionBy("stream").orderBy("island")))
-    seg = (cls.withColumn("kind", F.when(F.col("is_rle"), "rle")
-                          .otherwise("packed"))
-           .withColumn("segkey", F.when(F.col("is_rle"), F.col("island"))
-                       .otherwise(-1 - F.col("grp0")))
-           .groupBy("stream", "bw", "kind", "segkey")
-           .agg(F.min("start_p").alias("start_p"),
-                F.sum("len").alias("n_values"),
-                F.min("v").alias("vmin"), F.max("vmax").alias("vmax")))
-    vb = lambda c: (F.length(F.bin(F.greatest(c, F.lit(1)))) + 6)  # noqa: E731
-    szd = (seg.withColumn(
-        "seg_bytes",
-        F.when(F.col("kind") == "rle",
-               F.floor(vb(2 * F.col("n_values")) / 7)
-               + F.expr("(bw + 7) div 8"))
-        .otherwise(
-            F.floor(vb(2 * F.expr("(n_values + 7) div 8") + 1) / 7)
-            + F.expr("(n_values + 7) div 8") * F.col("bw")))
-        .withColumn("seg_idx",
-                    F.row_number().over(Window.partitionBy("stream")
-                                        .orderBy("start_p"))))
-    tot = szd.groupBy("stream").agg(
-        F.sum("seg_bytes").alias("total_bytes"),
-        F.sum("n_values").alias("n_total"))
-    return (szd.join(F.broadcast(tot), "stream")
-            .select("stream",
-                    F.col("seg_idx").cast("long").alias("seg_idx"),
-                    "kind",
-                    F.col("start_p").cast("long").alias("start_p"),
-                    F.col("n_values").cast("long").alias("n_values"),
-                    F.col("vmin").cast("int").alias("vmin"),
-                    F.col("vmax").cast("int").alias("vmax"),
-                    ((F.col("kind") == "packed")
-                     | (F.col("vmin") == F.col("vmax")))
-                    .alias("rle_uniform_ok"),
-                    ((F.col("kind") == "packed")
-                     | (F.col("n_values") >= 8)).alias("rle_minlen_ok"),
-                    F.col("seg_bytes").cast("long").alias("seg_bytes"),
-                    F.col("total_bytes").cast("long").alias("total_bytes"),
-                    F.col("n_total").cast("long").alias("plain_bytes"),
-                    (F.col("total_bytes") < F.col("n_total"))
-                    .alias("beats_plain")))
-
-
-_CUCKOO_N = 200      # inserts (doc_ids 0..199)
-_CUCKOO_B = 64       # buckets
-_CUCKOO_S = 4        # slots per bucket
-
-
-def _cuckoo_hashes(doc_id: int):
-    import hashlib as _h
-
-    def h60(s):
-        return int(_h.md5(s.encode()).hexdigest()[:15], 16)
-    fp = h60(f"fp:{doc_id}") % 255 + 1
-    i1 = h60(f"i1:{doc_id}") % _CUCKOO_B
-    i2 = i1 ^ (h60(f"fh:{fp}") % _CUCKOO_B)
-    return fp, i1, i2
-
-
-_CUCKOO_SQL = """
-WITH RECURSIVE ids AS (
-  SELECT doc_id FROM documents WHERE doc_id < 200
-), prep AS (
-  SELECT doc_id,
-         CAST(concat('0x', substr(md5('fp:' || CAST(doc_id AS VARCHAR)),
-                                  1, 15)) AS BIGINT) % 255 + 1 AS fp,
-         CAST(concat('0x', substr(md5('i1:' || CAST(doc_id AS VARCHAR)),
-                                  1, 15)) AS BIGINT) % 64 AS i1
-  FROM ids
-), items AS (
-  SELECT doc_id, fp, i1,
-         xor(i1, CAST(concat('0x', substr(md5('fh:' ||
-             CAST(fp AS VARCHAR)), 1, 15)) AS BIGINT) % 64) AS i2
-  FROM prep
-), st AS (
-  SELECT 0 AS t, 0 AS kicks, false AS carrying,
-         CAST(0 AS BIGINT) AS cfp, CAST(0 AS BIGINT) AS cb,
-         list_transform(range(1, 257), x -> CAST(0 AS BIGINT)) AS tbl,
-         (SELECT list(fp ORDER BY doc_id) FROM items) AS fps,
-         (SELECT list(i1 ORDER BY doc_id) FROM items) AS i1s,
-         (SELECT list(i2 ORDER BY doc_id) FROM items) AS i2s
-  UNION ALL
-  SELECT nx.nt, nx.nkicks, nx.ncarrying, nx.ncfp, nx.ncb, nx.ntbl,
-         s.fps, s.i1s, s.i2s
-  FROM st s
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN s.carrying THEN s.cfp
-           ELSE s.fps[CAST(s.t + 1 AS INTEGER)] END AS fp,
-           CASE WHEN s.carrying THEN s.cb
-           ELSE s.i1s[CAST(s.t + 1 AS INTEGER)] END AS b1,
-           CASE WHEN s.carrying THEN s.cb
-           ELSE s.i2s[CAST(s.t + 1 AS INTEGER)] END AS b2,
-           s.tbl AS tb) t0
-  CROSS JOIN LATERAL (
-    SELECT coalesce(list_position(
-             t0.tb[CAST(t0.b1 * 4 + 1 AS INTEGER):
-                   CAST(t0.b1 * 4 + 4 AS INTEGER)], 0), 0) AS e1,
-           coalesce(list_position(
-             t0.tb[CAST(t0.b2 * 4 + 1 AS INTEGER):
-                   CAST(t0.b2 * 4 + 4 AS INTEGER)], 0), 0) AS e2) t1
-  CROSS JOIN LATERAL (
-    SELECT CASE
-      WHEN t1.e1 > 0 THEN t0.b1 * 4 + t1.e1
-      WHEN t1.e2 > 0 THEN t0.b2 * 4 + t1.e2
-      ELSE t0.b2 * 4 + 1 + s.kicks % 4 END AS pos,
-      (t1.e1 = 0 AND t1.e2 = 0) AS kick) t2a
-  CROSS JOIN LATERAL (
-    SELECT t2a.pos AS pos, t2a.kick AS kick,
-           t0.tb[CAST(t2a.pos AS INTEGER)] AS victim) t2
-  CROSS JOIN LATERAL (
-    SELECT t0.tb[1:CAST(t2.pos - 1 AS INTEGER)]
-           || [t0.fp]
-           || t0.tb[CAST(t2.pos + 1 AS INTEGER):256] AS ntbl,
-           CASE WHEN NOT s.carrying THEN s.t + 1 ELSE s.t END AS nt,
-           CASE WHEN t2.kick THEN s.kicks + 1 ELSE s.kicks END AS nkicks,
-           t2.kick AS ncarrying,
-           CASE WHEN t2.kick THEN t2.victim ELSE CAST(0 AS BIGINT) END
-             AS ncfp,
-           CASE WHEN t2.kick THEN
-             xor((t2.pos - 1) // 4,
-                 CAST(concat('0x', substr(md5('fh:' ||
-                   CAST(coalesce(t2.victim, -1) AS VARCHAR)), 1, 15))
-                   AS BIGINT) % 64)
-           ELSE CAST(0 AS BIGINT) END AS ncb) nx
-  -- coalesce: DuckDB vectorized CASE evaluates both branches; the
-  -- not-taken branch must still be convertible when victim is NULL
-  WHERE (s.t < 200 OR s.carrying) AND s.t + s.kicks < 2000
-), fin AS (
-  SELECT tbl, kicks FROM st
-  WHERE t = 200 AND NOT carrying
-), lk AS (
-  SELECT it.doc_id, it.fp, it.i1, it.i2,
-         list_contains(f.tbl[CAST(it.i1 * 4 + 1 AS INTEGER):
-                             CAST(it.i1 * 4 + 4 AS INTEGER)],
-                       it.fp) AS in1,
-         list_contains(f.tbl[CAST(it.i2 * 4 + 1 AS INTEGER):
-                             CAST(it.i2 * 4 + 4 AS INTEGER)],
-                       it.fp) AS in2
-  FROM items it CROSS JOIN fin f
-), neg AS (
-  SELECT count(*) AS fp_tested,
-         sum(CASE WHEN inn1 OR inn2 THEN 1 ELSE 0 END) AS fp_hits
-  FROM (
-    SELECT list_contains(f.tbl[CAST(q.i1 * 4 + 1 AS INTEGER):
-                                CAST(q.i1 * 4 + 4 AS INTEGER)],
-                         q.fp) AS inn1,
-           list_contains(f.tbl[CAST(q.i2 * 4 + 1 AS INTEGER):
-                                CAST(q.i2 * 4 + 4 AS INTEGER)],
-                         q.fp) AS inn2
-    FROM (
-      SELECT fp, i1,
-             xor(i1, CAST(concat('0x', substr(md5('fh:' ||
-                 CAST(fp AS VARCHAR)), 1, 15)) AS BIGINT) % 64) AS i2
-      FROM (
-        SELECT CAST(concat('0x', substr(md5('fp:' ||
-                 CAST(x + 10000 AS VARCHAR)), 1, 15)) AS BIGINT)
-                 % 255 + 1 AS fp,
-               CAST(concat('0x', substr(md5('i1:' ||
-                 CAST(x + 10000 AS VARCHAR)), 1, 15)) AS BIGINT)
-                 % 64 AS i1
-        FROM (SELECT unnest(range(0, 200)) AS x))
-    ) q CROSS JOIN fin f)
-), occ AS (
-  SELECT len(list_filter(tbl, x -> x <> 0)) AS used FROM fin
-)
-SELECT l.doc_id, CAST(l.fp AS BIGINT) AS fp,
-       CAST(l.i1 AS BIGINT) AS i1, CAST(l.i2 AS BIGINT) AS i2,
-       l.in1 OR l.in2 AS found,
-       xor(l.i2, CAST(concat('0x', substr(md5('fh:' ||
-         CAST(l.fp AS VARCHAR)), 1, 15)) AS BIGINT) % 64) = l.i1
-         AS involution_ok,
-       CAST((SELECT kicks FROM fin) AS BIGINT) AS total_kicks,
-       CAST((SELECT used FROM occ) AS BIGINT) AS slots_used,
-       CAST((SELECT fp_tested FROM neg) AS BIGINT) AS neg_tested,
-       CAST((SELECT fp_hits FROM neg) AS BIGINT) AS neg_false_pos
-FROM lk l
-"""
-
-
-@register("sketch_cuckoo_filter", _CUCKOO_SQL)
-def sketch_cuckoo_filter(spark, sf_dir):
-    """Cuckoo filter (Fan et al.) — the deletable Bloom alternative:
-    64 buckets × 4 slots, 8-bit nonzero md5 fingerprints, partial-key
-    cuckoo hashing i2 = i1 XOR h(fp) whose INVOLUTION property (either
-    bucket recovers the other from the stored fingerprint alone — the
-    trick that makes relocation possible without the original key) is
-    pinned per item. 200 inserts replayed with deterministic eviction
-    (victim slot = kicks mod 4 in the alternate bucket, displaced
-    fingerprint re-routed through the involution), then the structural
-    guarantee every filter answer rests on — ZERO false negatives: all
-    200 inserted items found — pinned per row, with a measured
-    false-positive count over 200 disjoint probe keys and the final
-    load factor riding as constants. Engine: bounded driver replay;
-    oracle: identical recursion over a flat 256-slot table with the
-    kick chain as carried state, hard-bounded at 2000 steps."""
-    ids = sorted(r["doc_id"] for r in _t(spark, sf_dir, "documents")
-                 .filter(F.col("doc_id") < _CUCKOO_N)
-                 .select("doc_id").collect())
-    inserted = []
-    tbl = [0] * (_CUCKOO_B * _CUCKOO_S)
-    kicks = 0
-    for did in ids:
-        fp, i1, i2 = _cuckoo_hashes(did)
-        inserted.append((did, fp, i1, i2))
-        cfp, b1, b2 = fp, i1, i2
-        carrying = True
-        while carrying:
-            e1 = next((k for k in range(_CUCKOO_S)
-                       if tbl[b1 * 4 + k] == 0), None)
-            e2 = next((k for k in range(_CUCKOO_S)
-                       if tbl[b2 * 4 + k] == 0), None)
-            if e1 is not None:
-                tbl[b1 * 4 + e1] = cfp
-                carrying = False
-            elif e2 is not None:
-                tbl[b2 * 4 + e2] = cfp
-                carrying = False
-            else:
-                s = kicks % 4
-                victim = tbl[b2 * 4 + s]
-                tbl[b2 * 4 + s] = cfp
-                kicks += 1
-                import hashlib as _h
-                vh = int(_h.md5(f"fh:{victim}".encode())
-                         .hexdigest()[:15], 16) % _CUCKOO_B
-                cfp = victim
-                b1 = b2 = b2 ^ vh
-            assert kicks < 1800, "cuckoo table unexpectedly full"
-    used = sum(1 for x in tbl if x != 0)
-    neg_hits = 0
-    for x in range(_CUCKOO_N):
-        fp, i1, i2 = _cuckoo_hashes(x + 10000)
-        if any(tbl[i1 * 4 + k] == fp for k in range(4)) or \
-           any(tbl[i2 * 4 + k] == fp for k in range(4)):
-            neg_hits += 1
-    import hashlib as _h2
-    rows = []
-    for did, fp, i1, i2 in inserted:
-        found = any(tbl[i1 * 4 + k] == fp for k in range(4)) or \
-            any(tbl[i2 * 4 + k] == fp for k in range(4))
-        inv = (i2 ^ (int(_h2.md5(f"fh:{fp}".encode())
-                         .hexdigest()[:15], 16) % _CUCKOO_B)) == i1
-        rows.append((did, fp, i1, i2, found, inv, kicks, used,
-                     _CUCKOO_N, neg_hits))
-    return spark.createDataFrame(
-        rows, "doc_id long, fp long, i1 long, i2 long, found boolean,"
-              " involution_ok boolean, total_kicks long,"
-              " slots_used long, neg_tested long, neg_false_pos long")
-
-
-_KMERGE_SQL = """
-WITH RECURSIVE runs AS (
-  SELECT CAST(dense_rank() OVER (ORDER BY d) AS BIGINT) AS id,
-         c AS sz
-  FROM (SELECT CAST(ts AS DATE) AS d, count(*) AS c
-        FROM events GROUP BY 1)
-), pad AS (
-  SELECT id, sz FROM runs
-  UNION ALL
-  SELECT (SELECT max(id) FROM runs) + x, CAST(0 AS BIGINT)
-  FROM (SELECT unnest(range(1,
-         CAST((2 - ((SELECT count(*) FROM runs) - 1) % 2) % 2 + 1
-              AS INTEGER))) AS x)
-), naive AS (
-  SELECT sum(pf) AS naive_cost
-  FROM (SELECT id, sum(sz) OVER (ORDER BY id) AS pf FROM pad)
-  WHERE id >= 3 AND id % 2 = 1
-), st AS (
-  SELECT 0 AS step, CAST(0 AS BIGINT) AS a_sz, CAST(0 AS BIGINT) AS b_sz,
-         CAST(0 AS BIGINT) AS c_sz, CAST(0 AS BIGINT) AS new_sz,
-         CAST(0 AS BIGINT) AS cum_cost,
-         (SELECT max(id) FROM pad) AS nid,
-         (SELECT list(struct_pack(sz := sz, id := id)
-                      ORDER BY sz, id) FROM pad) AS l
-  UNION ALL
-  SELECT s.step + 1, t0.a, t0.b, t0.c, t0.ns, s.cum_cost + t0.ns,
-         s.nid + 1, t2.nl
-  FROM st s
-  CROSS JOIN LATERAL (
-    SELECT s.l[1].sz AS a, s.l[2].sz AS b, s.l[3].sz AS c,
-           s.l[1].sz + s.l[2].sz + s.l[3].sz AS ns,
-           s.l[4:CAST(len(s.l) AS INTEGER)] AS rest) t0
-  CROSS JOIN LATERAL (
-    SELECT len(list_filter(t0.rest, e -> e.sz <= t0.ns)) AS pos) t1
-  CROSS JOIN LATERAL (
-    SELECT t0.rest[1:CAST(t1.pos AS INTEGER)]
-           || [struct_pack(sz := t0.ns, id := s.nid + 1)]
-           || t0.rest[CAST(t1.pos + 1 AS INTEGER):
-                      CAST(len(t0.rest) AS INTEGER)] AS nl) t2
-  WHERE len(s.l) > 1
-), fin AS (
-  SELECT cum_cost AS total_cost, new_sz AS root_sz, step AS n_steps
-  FROM st WHERE len(l) = 1
-), tots AS (
-  SELECT sum(sz) AS total_bytes, count(*) AS n_runs FROM runs
-)
-SELECT CAST(s.step AS INTEGER) AS step, s.a_sz, s.b_sz, s.c_sz,
-       s.new_sz, s.cum_cost,
-       CAST((SELECT total_cost FROM fin) AS BIGINT) AS total_cost,
-       CAST((SELECT naive_cost FROM naive) AS BIGINT) AS naive_cost,
-       (SELECT total_cost FROM fin) <= (SELECT naive_cost FROM naive)
-         AS huffman_le_naive,
-       (SELECT root_sz FROM fin) = (SELECT total_bytes FROM tots)
-         AS root_ok,
-       CAST((SELECT n_runs FROM tots) AS BIGINT) AS n_runs,
-       CAST((SELECT count(*) FROM pad) - (SELECT n_runs FROM tots)
-            AS BIGINT) AS dummies,
-       ((SELECT count(*) FROM pad) - 1) % 2 = 0 AS pad_ok
-FROM st s WHERE s.step >= 1
-"""
-
-
-@register("q_events_kway_merge_plan", _KMERGE_SQL)
-def q_events_kway_merge_plan(spark, sf_dir):
-    """Optimal external-sort merge scheduling: the 30 daily run sizes
-    merged 3 ways by the k-ary Huffman rule (Knuth's optimal merge
-    pattern — always merge the 3 smallest runs, ties by id), padded
-    with ((n−1) mod (k−1)) zero-size dummy runs so every internal node
-    has exactly k children (pad_ok pinned) — the algorithm that plans
-    multiway spill merges in every external sorter. The full merge
-    schedule is emitted step by step with cumulative read+write cost,
-    and two audits ride along: the root size must equal the total
-    bytes (conservation), and the Huffman cost must not exceed the
-    NAIVE sequential fold whose cost collapses to a closed form — the
-    sum of odd-index prefix sums, one window, no recursion. Run sizes
-    are one map-side-combinable day aggregate; the schedule itself is
-    O(runs log runs) planner work over bounded metadata, exactly where
-    a shuffle-merge planner runs it. Engine: bounded driver replay;
-    oracle: sorted-list recursion, one merge per step with ordered
-    reinsertion."""
-    e = _t(spark, sf_dir, "events")
-    days = (e.groupBy(F.col("ts").cast("date").alias("d"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .orderBy("d").collect())
-    sizes = [int(r["c"]) for r in days]
-    n = len(sizes)
-    d = (2 - (n - 1) % 2) % 2
-    leaves = [(sz, i + 1) for i, sz in enumerate(sizes)] \
-        + [(0, n + 1 + i) for i in range(d)]
-    # naive sequential 3-way fold: sum of odd-position prefix sums
-    allsz = [sz for sz, _ in leaves]
-    pf, naive = 0, 0
-    for i, sz in enumerate(allsz, start=1):
-        pf += sz
-        if i >= 3 and i % 2 == 1:
-            naive += pf
-    lst = sorted(leaves)
-    nid = len(leaves)
-    cost = 0
-    steps = []
-    while len(lst) > 1:
-        (a, _), (b, _), (c, _) = lst[0], lst[1], lst[2]
-        ns = a + b + c
-        nid += 1
-        cost += ns
-        rest = lst[3:]
-        pos = sum(1 for e2 in rest if e2[0] <= ns)
-        lst = rest[:pos] + [(ns, nid)] + rest[pos:]
-        steps.append((len(steps) + 1, a, b, c, ns, cost))
-    total = sum(allsz)
-    rows = [(st, a, b, c, ns, cc, cost, naive, cost <= naive,
-             steps[-1][4] == total, n, d, (len(leaves) - 1) % 2 == 0)
-            for st, a, b, c, ns, cc in steps]
-    return spark.createDataFrame(
-        rows, "step int, a_sz long, b_sz long, c_sz long, new_sz long,"
-              " cum_cost long, total_cost long, naive_cost long,"
-              " huffman_le_naive boolean, root_ok boolean, n_runs long,"
-              " dummies long, pad_ok boolean")
-
-
-_ZONEMAP_SQL = """
-WITH ev AS (
-  SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-         CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
-  FROM events
-), zm AS (
-  SELECT day, min(v) AS zmin, max(v) AS zmax, count(*) AS n,
-         sum(CASE WHEN v BETWEEN 0 AND 1000 THEN 1 ELSE 0 END) AS m1,
-         sum(CASE WHEN v BETWEEN 10000 AND 20000 THEN 1 ELSE 0 END)
-           AS m2,
-         sum(CASE WHEN v BETWEEN 40000 AND 50000 THEN 1 ELSE 0 END)
-           AS m3,
-         sum(CASE WHEN v BETWEEN 25000 AND 26000 THEN 1 ELSE 0 END)
-           AS m4
-  FROM ev GROUP BY day
-), px AS (
-  SELECT z.day, z.zmin, z.zmax, z.n, p.probe, p.lo, p.hi,
-         CASE p.probe WHEN 1 THEN z.m1 WHEN 2 THEN z.m2
-              WHEN 3 THEN z.m3 ELSE z.m4 END AS matches,
-         (z.zmax < p.lo OR z.zmin > p.hi) AS pruned
-  FROM zm z CROSS JOIN (VALUES (1, 0, 1000), (2, 10000, 20000),
-                               (3, 40000, 50000), (4, 25000, 26000))
-                       p(probe, lo, hi)
-)
-SELECT day, CAST(probe AS INTEGER) AS probe,
-       CAST(lo AS BIGINT) AS lo, CAST(hi AS BIGINT) AS hi,
-       CAST(zmin AS BIGINT) AS zmin_e2, CAST(zmax AS BIGINT) AS zmax_e2,
-       CAST(n AS BIGINT) AS n_rows, CAST(matches AS BIGINT) AS matches,
-       pruned,
-       NOT (pruned AND matches > 0) AS sound_ok,
-       (NOT pruned AND matches = 0) AS false_keep,
-       CAST(sum(CASE WHEN pruned THEN 1 ELSE 0 END)
-            OVER (PARTITION BY probe) AS BIGINT) AS pruned_parts,
-       CAST(sum(CASE WHEN NOT pruned AND matches = 0 THEN 1 ELSE 0 END)
-            OVER (PARTITION BY probe) AS BIGINT) AS false_keeps,
-       CAST(count(*) OVER (PARTITION BY probe) AS BIGINT) AS total_parts
-FROM px
-"""
-
-
-@register("q_events_zonemap_pruning", _ZONEMAP_SQL)
-def q_events_zonemap_pruning(spark, sf_dir):
-    """Zone-map (min/max statistics) partition pruning audit — the
-    mechanism behind parquet row-group skipping and every warehouse's
-    partition elimination: per day-partition min/max of the value
-    column (kept exact as cents), then four range probes of graded
-    selectivity decide prune/keep per partition, with the SOUNDNESS
-    contract pinned on every (partition, probe) row — a pruned
-    partition must contain ZERO matching rows (the exact match counts
-    for all four probes ride out of the SAME single aggregate pass as
-    the zone maps, so the audit costs no extra scan). The false-keep
-    count per probe (kept partitions with no matches — the clustering-
-    quality signal that motivates z-ordering) and pruned-partition
-    totals ride along as window columns. One map-side-combinable
-    aggregate + a 4-row broadcast: the exact plan shape of stats-based
-    pruning at any scale."""
-    e = _t(spark, sf_dir, "events")
-    v = F.floor(F.col("value") * 100 + 0.5).cast("long")
-    probes = [(1, 0, 1000), (2, 10000, 20000),
-              (3, 40000, 50000), (4, 25000, 26000)]
-    aggs = [F.min("v").alias("zmin"), F.max("v").alias("zmax"),
-            F.count(F.lit(1)).alias("n")]
-    for pid, lo, hi in probes:
-        aggs.append(F.sum(F.when(F.col("v").between(lo, hi), 1)
-                          .otherwise(0)).alias(f"m{pid}"))
-    zm = (e.select(F.col("ts").cast("date").cast("string").alias("day"),
-                   v.alias("v"))
-          .groupBy("day").agg(*aggs))
-    pdf = spark.createDataFrame(probes, "probe int, lo long, hi long")
-    px = (zm.crossJoin(F.broadcast(pdf))
-          .withColumn("matches",
-                      F.when(F.col("probe") == 1, F.col("m1"))
-                      .when(F.col("probe") == 2, F.col("m2"))
-                      .when(F.col("probe") == 3, F.col("m3"))
-                      .otherwise(F.col("m4")))
-          .withColumn("pruned", (F.col("zmax") < F.col("lo"))
-                      | (F.col("zmin") > F.col("hi"))))
-    wp = Window.partitionBy("probe")
-    return px.select(
-        "day", F.col("probe").cast("int").alias("probe"),
-        F.col("lo").cast("long"), F.col("hi").cast("long"),
-        F.col("zmin").cast("long").alias("zmin_e2"),
-        F.col("zmax").cast("long").alias("zmax_e2"),
-        F.col("n").cast("long").alias("n_rows"),
-        F.col("matches").cast("long").alias("matches"),
-        "pruned",
-        (~(F.col("pruned") & (F.col("matches") > 0))).alias("sound_ok"),
-        ((~F.col("pruned")) & (F.col("matches") == 0))
-        .alias("false_keep"),
-        F.sum(F.when(F.col("pruned"), 1).otherwise(0)).over(wp)
-        .cast("long").alias("pruned_parts"),
-        F.sum(F.when((~F.col("pruned")) & (F.col("matches") == 0), 1)
-              .otherwise(0)).over(wp).cast("long").alias("false_keeps"),
-        F.count(F.lit(1)).over(wp).cast("long").alias("total_parts"))
-
-
-_LSM_SQL = """
-WITH RECURSIVE fl AS (
-  SELECT CAST(dense_rank() OVER (ORDER BY d) AS BIGINT) AS i, c AS sz
-  FROM (SELECT CAST(ts AS DATE) AS d, count(*) AS c
-        FROM events GROUP BY 1)
-), tot AS (
-  SELECT sum(sz) AS total, count(*) AS nf,
-         sum(sz) // 10 AS l1max
-  FROM fl
-), st AS (
-  SELECT 0 AS t, CAST(0 AS BIGINT) AS lw, CAST(0 AS BIGINT) AS tw,
-         CAST(0 AS BIGINT) AS l1, CAST(0 AS BIGINT) AS l2,
-         list_transform(range(1, 7), x ->
-           struct_pack(cnt := CAST(0 AS BIGINT),
-                       sz := CAST(0 AS BIGINT))) AS tiers,
-         CAST(0 AS BIGINT) AS lstep, CAST(0 AS BIGINT) AS tstep,
-         (SELECT list(sz ORDER BY i) FROM fl) AS xs
-  UNION ALL
-  SELECT s.t + 1, s.lw + lv.wr, s.tw + t0.f + tb.w1 + tc.w2,
-         lv.nl1, lv.nl2, tc.tr2, lv.wr, t0.f + tb.w1 + tc.w2, s.xs
-  FROM st s
-  CROSS JOIN LATERAL (
-    SELECT s.xs[CAST(s.t + 1 AS INTEGER)] AS f) t0
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN s.l1 + t0.f > (SELECT l1max FROM tot)
-           THEN t0.f + s.l1 + (s.l1 + t0.f + s.l2)
-           ELSE t0.f + s.l1 END AS wr,
-           CASE WHEN s.l1 + t0.f > (SELECT l1max FROM tot)
-           THEN CAST(0 AS BIGINT) ELSE s.l1 + t0.f END AS nl1,
-           CASE WHEN s.l1 + t0.f > (SELECT l1max FROM tot)
-           THEN s.l2 + s.l1 + t0.f ELSE s.l2 END AS nl2) lv
-  CROSS JOIN LATERAL (
-    SELECT list_transform(s.tiers, (e, x) -> CASE WHEN x = 1
-             THEN struct_pack(cnt := e.cnt + 1, sz := e.sz + t0.f)
-             ELSE e END) AS tr0) ta
-  CROSS JOIN LATERAL (
-    SELECT ta.tr0[1].cnt AS c1, ta.tr0[1].sz AS s1) ta1
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN ta1.c1 >= 4 THEN ta1.s1
-           ELSE CAST(0 AS BIGINT) END AS w1,
-           CASE WHEN ta1.c1 >= 4 THEN
-             list_transform(ta.tr0, (e, x) -> CASE
-               WHEN x = 1 THEN struct_pack(cnt := CAST(0 AS BIGINT),
-                                           sz := CAST(0 AS BIGINT))
-               WHEN x = 2 THEN struct_pack(cnt := e.cnt + 1,
-                                           sz := e.sz + ta1.s1)
-               ELSE e END)
-           ELSE ta.tr0 END AS tr1) tb
-  CROSS JOIN LATERAL (
-    SELECT tb.tr1[2].cnt AS c2, tb.tr1[2].sz AS s2) tb1
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN tb1.c2 >= 4
-           THEN tb1.s2 ELSE CAST(0 AS BIGINT) END AS w2,
-           CASE WHEN tb1.c2 >= 4 THEN
-             list_transform(tb.tr1, (e, x) -> CASE
-               WHEN x = 2 THEN struct_pack(cnt := CAST(0 AS BIGINT),
-                                           sz := CAST(0 AS BIGINT))
-               WHEN x = 3 THEN struct_pack(cnt := e.cnt + 1,
-                                           sz := e.sz + tb1.s2)
-               ELSE e END)
-           ELSE tb.tr1 END AS tr2) tc
-  WHERE s.t < (SELECT nf FROM tot)
-), fin AS (
-  SELECT lw, tw, l1, l2,
-         tiers[1].sz + tiers[2].sz + tiers[3].sz + tiers[4].sz
-           + tiers[5].sz + tiers[6].sz AS tiered_stored
-  FROM st WHERE t = (SELECT nf FROM tot)
-)
-SELECT CAST(s.t AS INTEGER) AS flush,
-       s.xs[CAST(s.t AS INTEGER)] AS bytes_in,
-       s.lstep AS leveled_written, s.tstep AS tiered_written,
-       s.lw AS leveled_cum, s.tw AS tiered_cum,
-       CAST((SELECT lw FROM fin) * 1000000
-            // (SELECT total FROM tot) AS BIGINT) AS wa_leveled_e6,
-       CAST((SELECT tw FROM fin) * 1000000
-            // (SELECT total FROM tot) AS BIGINT) AS wa_tiered_e6,
-       (SELECT lw FROM fin) >= (SELECT tw FROM fin)
-         AS leveled_writes_more,
-       (SELECT l1 + l2 FROM fin) = (SELECT total FROM tot)
-         AS leveled_conserved,
-       (SELECT tiered_stored FROM fin) = (SELECT total FROM tot)
-         AS tiered_conserved
-FROM st s WHERE s.t >= 1
-"""
-
-
-@register("q_events_lsm_compaction", _LSM_SQL)
-def q_events_lsm_compaction(spark, sf_dir):
-    """LSM compaction strategy duel — leveled (RocksDB-style: every
-    flush rewrites L1, overflow past total/10 pushes the whole of L1
-    into L2 rewriting both) versus size-tiered (Cassandra/universal:
-    4 runs per tier trigger a tier merge cascading upward), replayed
-    over the 30 daily flush sizes with per-flush write costs, both
-    cumulative write totals, and the e6 write-amplification factors.
-    Pinned: byte conservation in BOTH final structures (stored ==
-    ingested — a compaction that loses or duplicates bytes is wrong),
-    and the structural trade every storage-engine paper states —
-    leveled writes more than tiered on the same ingest (it buys read
-    amplification with write amplification; deterministic here and
-    stable across scales since flush sizes scale proportionally).
-    Flush sizes are one map-side day aggregate; the 30-step state
-    machine is bounded planner work. Engine: driver replay; oracle:
-    identical recursion with per-tier (count, size) state and the
-    two-level cascade unrolled (tier counts never exceed level 3 at
-    30 flushes of 4-fold fanout)."""
-    e = _t(spark, sf_dir, "events")
-    days = (e.groupBy(F.col("ts").cast("date").alias("d"))
-            .agg(F.count(F.lit(1)).alias("c")).orderBy("d").collect())
-    xs = [int(r["c"]) for r in days]
-    total = sum(xs)
-    l1max = total // 10
-    l1 = l2 = lw = tw = 0
-    tiers = [[0, 0] for _ in range(6)]  # [cnt, sz]
-    rows = []
-    for t, f in enumerate(xs, start=1):
-        # leveled
-        if l1 + f > l1max:
-            lstep = f + l1 + (l1 + f + l2)
-            l2 += l1 + f
-            l1 = 0
-        else:
-            lstep = f + l1
-            l1 += f
-        lw += lstep
-        # tiered: flush into tier 0 (cost f), cascade merges
-        tstep = f
-        tiers[0][0] += 1
-        tiers[0][1] += f
-        if tiers[0][0] >= 4:
-            tstep += tiers[0][1]
-            tiers[1][0] += 1
-            tiers[1][1] += tiers[0][1]
-            tiers[0] = [0, 0]
-            if tiers[1][0] >= 4:
-                tstep += tiers[1][1]
-                tiers[2][0] += 1
-                tiers[2][1] += tiers[1][1]
-                tiers[1] = [0, 0]
-        tw += tstep
-        rows.append((t, f, lstep, tstep, lw, tw))
-    stored = sum(s for _, s in tiers)
-    out = [(t, f, ls, ts_, lc, tc,
-            lw * 1000000 // total, tw * 1000000 // total,
-            lw >= tw, l1 + l2 == total, stored == total)
-           for t, f, ls, ts_, lc, tc in rows]
-    return spark.createDataFrame(
-        out, "flush int, bytes_in long, leveled_written long,"
-             " tiered_written long, leveled_cum long, tiered_cum long,"
-             " wa_leveled_e6 long, wa_tiered_e6 long,"
-             " leveled_writes_more boolean, leveled_conserved boolean,"
-             " tiered_conserved boolean")
-
-
-_RH_N = 200     # keys (doc_ids < 200)
-_RH_M = 256     # table slots
-
-
-_ROBINHOOD_SQL = """
-WITH RECURSIVE keys AS (
-  SELECT doc_id,
-         CAST(concat('0x', substr(md5('rh:' || CAST(doc_id AS VARCHAR)),
-                                  1, 15)) AS BIGINT) % 256 AS home
-  FROM documents WHERE doc_id < 200
-), lp AS (
-  -- literal FCFS linear probing, one key per step (order-dependent)
-  SELECT 0 AS t, list_transform(range(1, 257), x ->
-           CAST(-1 AS BIGINT)) AS slots,
-         (SELECT list(doc_id ORDER BY doc_id) FROM keys) AS ids,
-         (SELECT list(home ORDER BY doc_id) FROM keys) AS homes
-  UNION ALL
-  SELECT s.t + 1, t2.ns, s.ids, s.homes
-  FROM lp s
-  CROSS JOIN LATERAL (
-    SELECT s.ids[CAST(s.t + 1 AS INTEGER)] AS id,
-           s.homes[CAST(s.t + 1 AS INTEGER)] AS home) t0
-  CROSS JOIN LATERAL (
-    SELECT list_min(list_transform(s.slots, (e, i) ->
-             CASE WHEN e = -1
-             THEN (i - 1 - t0.home + 256) % 256 ELSE 999 END)) AS d) t1
-  CROSS JOIN LATERAL (
-    SELECT ((t0.home + t1.d) % 256) + 1 AS pos) t1b
-  CROSS JOIN LATERAL (
-    SELECT list_transform(s.slots, (e, i) ->
-             CASE WHEN i = t1b.pos THEN t0.id ELSE e END) AS ns) t2
-  WHERE s.t < 200
-), lpfin AS (
-  SELECT slots FROM lp WHERE t = 200
-), lpp AS (
-  SELECT CAST(e AS BIGINT) AS doc_id, CAST(i - 1 AS BIGINT) AS slot
-  FROM lpfin, LATERAL (
-    SELECT unnest(slots) AS e,
-           unnest(generate_series(1, len(slots))) AS i) u
-  WHERE e >= 0
-), hq AS (
-  SELECT g.h,
-         coalesce((SELECT list(k.doc_id ORDER BY k.doc_id)
-                   FROM keys k WHERE k.home = g.h), []) AS ids
-  FROM (SELECT unnest(range(0, 256)) AS h) g
-), rh AS (
-  -- ring-walk construction of the Robin Hood layout: keys join the
-  -- queue when the walk passes their home; the front of the FIFO
-  -- queue takes each slot. TWO laps with arrivals on both and only
-  -- lap-2 placements recorded: the simulated queue starts below the
-  -- stationary one and couples with it at the first truly-empty slot
-  -- (one exists at 78% load), so lap 2 replays the exact cyclic
-  -- steady state that wraparound runs require.
-  SELECT 0 AS w,
-         CAST([] AS BIGINT[]) AS q,
-         CAST([] AS STRUCT(id BIGINT, slot BIGINT)[]) AS placed,
-         (SELECT list(ids ORDER BY h) FROM hq) AS perhome
-  UNION ALL
-  SELECT s.w + 1, t1.nq2, t1.nplaced, s.perhome
-  FROM rh s
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN s.w < 512
-           THEN s.q || s.perhome[CAST(s.w % 256 + 1 AS INTEGER)]
-           ELSE s.q END AS nq) t0
-  CROSS JOIN LATERAL (
-    SELECT CASE WHEN len(t0.nq) > 0 THEN t0.nq[2:CAST(len(t0.nq)
-             AS INTEGER)] ELSE t0.nq END AS nq2,
-           CASE WHEN len(t0.nq) > 0 AND s.w >= 256 THEN s.placed ||
-             [struct_pack(id := t0.nq[1],
-                          slot := CAST(s.w % 256 AS BIGINT))]
-           ELSE s.placed END AS nplaced) t1
-  WHERE s.w < 512 OR len(s.q) > 0
-), rhp AS (
-  -- wrapped-run keys appear twice (their lap-1 copy placed at the lap-2
-  -- start and their lap-2 copy placed in the drain) at the SAME slot —
-  -- the coupling argument's fixed point — so DISTINCT is exact
-  SELECT DISTINCT p.id AS doc_id, p.slot
-  FROM (SELECT placed FROM rh ORDER BY w DESC LIMIT 1) f,
-       LATERAL (SELECT unnest(placed) AS p) u
-), j AS (
-  SELECT k.doc_id, k.home,
-         l.slot AS lp_slot,
-         (l.slot - k.home + 256) % 256 AS lp_disp,
-         r.slot AS rh_slot,
-         (r.slot - k.home + 256) % 256 AS rh_disp
-  FROM keys k
-  JOIN lpp l ON l.doc_id = k.doc_id
-  JOIN rhp r ON r.doc_id = k.doc_id
-), tots AS (
-  SELECT sum(lp_disp) AS tlp, sum(rh_disp) AS trh,
-         sum(lp_disp * lp_disp) AS qlp,
-         sum(rh_disp * rh_disp) AS qrh,
-         max(lp_disp) AS mlp, max(rh_disp) AS mrh,
-         md5(string_agg(CAST(lp_slot AS VARCHAR), ','
-                        ORDER BY lp_slot)) AS slp,
-         md5(string_agg(CAST(rh_slot AS VARCHAR), ','
-                        ORDER BY rh_slot)) AS srh
-  FROM j
-)
-SELECT j.doc_id, CAST(j.home AS BIGINT) AS home,
-       CAST(j.lp_slot AS BIGINT) AS lp_slot,
-       CAST(j.lp_disp AS BIGINT) AS lp_disp,
-       CAST(j.rh_slot AS BIGINT) AS rh_slot,
-       CAST(j.rh_disp AS BIGINT) AS rh_disp,
-       CAST(t.tlp AS BIGINT) AS total_disp_lp,
-       CAST(t.trh AS BIGINT) AS total_disp_rh,
-       t.tlp = t.trh AS mean_equal_ok,
-       CAST(t.qlp AS BIGINT) AS sumsq_lp,
-       CAST(t.qrh AS BIGINT) AS sumsq_rh,
-       t.qrh <= t.qlp AS variance_ok,
-       t.slp = t.srh AS slots_equal_ok,
-       CAST(t.mlp AS BIGINT) AS max_disp_lp,
-       CAST(t.mrh AS BIGINT) AS max_disp_rh
-FROM j CROSS JOIN tots t
-"""
-
-
-@register("q_docs_robin_hood_probing", _ROBINHOOD_SQL)
-def q_docs_robin_hood_probing(spark, sf_dir):
-    """Robin Hood hashing versus FCFS linear probing on the same 200
-    md5-homed keys in a 256-slot table (78% load) — the open-addressing
-    duel behind every hash join and in-memory hash table, with all
-    three classic theorems PINNED from the data: (1) the occupied slot
-    SET is identical under any linear-probing reordering policy
-    (md5 of the sorted slot lists equal), (2) total (hence mean)
-    displacement is identical — reordering only redistributes it, and
-    (3) Robin Hood minimizes displacement VARIANCE, so its sum of
-    squares is ≤ FCFS's. The two engines compute Robin Hood by
-    DIFFERENT algorithms — the engine replays literal probe-and-swap
-    insertion (take from the rich: swap when the incoming key's current
-    distance exceeds the resident's, with a total-order tiebreak on id
-    for equal distances that makes the final layout HISTORY-INDEPENDENT
-    — the canonical-RH property), the oracle runs the O(m) ring-walk
-    construction (keys enqueue as the walk passes their home,
-    earliest-home-then-id takes each slot; TWO laps with only lap-2
-    placements recorded, because the simulated queue starts below the
-    cyclic steady state and provably couples with it at the first
-    truly-empty slot — the wraparound-run fix) — so the value-hash
-    equality of the correctness gate doubles as a machine-checked proof
-    that the walk reproduces the swap semantics. FCFS is replayed
-    literally in both (it IS order-dependent)."""
-    ks = sorted((r["doc_id"],
-                 int(__import__("hashlib").md5(
-                     f"rh:{r['doc_id']}".encode()).hexdigest()[:15], 16)
-                 % _RH_M)
-                for r in _t(spark, sf_dir, "documents")
-                .filter(F.col("doc_id") < _RH_N)
-                .select("doc_id").collect())
-    # FCFS linear probing
-    lp_slots = [-1] * _RH_M
-    lp_pos = {}
-    for did, home in ks:
-        d = 0
-        while lp_slots[(home + d) % _RH_M] != -1:
-            d += 1
-        lp_slots[(home + d) % _RH_M] = did
-        lp_pos[did] = (home + d) % _RH_M
-    # Robin Hood: literal probe-and-swap
-    rh_slots: list = [None] * _RH_M
-    for did, home in ks:
-        cid, chome, d = did, home, 0
-        while True:
-            pos = (chome + d) % _RH_M
-            res = rh_slots[pos]
-            if res is None:
-                rh_slots[pos] = (cid, chome)
-                break
-            rdisp = (pos - res[1] + _RH_M) % _RH_M
-            # total-order tiebreak (distance, then id): equal distance
-            # implies equal home, and smaller id wins the slot — this
-            # makes the final layout HISTORY-INDEPENDENT (canonical),
-            # which is exactly what the oracle's ring walk computes
-            if rdisp < d or (rdisp == d and res[0] > cid):
-                rh_slots[pos] = (cid, chome)
-                cid, chome = res
-                d = rdisp
-            d += 1
-    rh_pos = {cid: pos for pos, v in enumerate(rh_slots)
-              if v is not None for cid, _ in [v]}
-    tlp = sum((lp_pos[i] - h + _RH_M) % _RH_M for i, h in ks)
-    trh = sum((rh_pos[i] - h + _RH_M) % _RH_M for i, h in ks)
-    qlp = sum(((lp_pos[i] - h + _RH_M) % _RH_M) ** 2 for i, h in ks)
-    qrh = sum(((rh_pos[i] - h + _RH_M) % _RH_M) ** 2 for i, h in ks)
-    mlp = max((lp_pos[i] - h + _RH_M) % _RH_M for i, h in ks)
-    mrh = max((rh_pos[i] - h + _RH_M) % _RH_M for i, h in ks)
-    import hashlib as _hl
-    slp = _hl.md5(",".join(str(s) for s in
-                           sorted(lp_pos.values())).encode()).hexdigest()
-    srh = _hl.md5(",".join(str(s) for s in
-                           sorted(rh_pos.values())).encode()).hexdigest()
-    rows = [(did, home, lp_pos[did],
-             (lp_pos[did] - home + _RH_M) % _RH_M, rh_pos[did],
-             (rh_pos[did] - home + _RH_M) % _RH_M,
-             tlp, trh, tlp == trh, qlp, qrh, qrh <= qlp, slp == srh,
-             mlp, mrh) for did, home in ks]
-    return spark.createDataFrame(
-        rows, "doc_id long, home long, lp_slot long, lp_disp long,"
-              " rh_slot long, rh_disp long, total_disp_lp long,"
-              " total_disp_rh long, mean_equal_ok boolean,"
-              " sumsq_lp long, sumsq_rh long, variance_ok boolean,"
-              " slots_equal_ok boolean, max_disp_lp long,"
-              " max_disp_rh long")
-
-
-_BPTREE_SQL = """
-WITH RECURSIVE ks AS (
-  SELECT doc_id, row_number() OVER (ORDER BY doc_id) - 1 AS rk
-  FROM documents
-), nn AS (
-  SELECT count(*) AS n FROM ks
-), cnt AS (
-  SELECT 0 AS level, (SELECT (n + 7) // 8 FROM nn) AS c
-  UNION ALL
-  SELECT level + 1, (c + 7) // 8 FROM cnt WHERE c > 1
-), nodes AS (
-  SELECT c.level, CAST(i AS BIGINT) AS idx, c.c AS level_count,
-         CAST(power(8, c.level + 1) AS BIGINT) AS span
-  FROM cnt c, LATERAL (SELECT unnest(range(0, c.c)) AS i) u
-), nd AS (
-  SELECT n.level, n.idx, n.level_count,
-         n.span * n.idx AS lo_rk,
-         least((SELECT nn.n FROM nn), n.span * (n.idx + 1)) - 1 AS hi_rk,
-         CASE WHEN n.level = 0
-           THEN least(CAST(8 AS BIGINT),
-                      (SELECT nn.n FROM nn) - 8 * n.idx)
-           ELSE least(CAST(8 AS BIGINT),
-                      (SELECT c2.c FROM cnt c2
-                       WHERE c2.level = n.level - 1) - 8 * n.idx)
-         END AS n_entries
-  FROM nodes n
-), res AS (
-  SELECT d.level, d.idx, d.n_entries,
-         kl.doc_id AS min_key, kh.doc_id AS max_key,
-         d.level_count,
-         (d.n_entries = 8 OR d.idx = d.level_count - 1) AS full_ok
-  FROM nd d
-  JOIN ks kl ON kl.rk = d.lo_rk
-  JOIN ks kh ON kh.rk = d.hi_rk
-)
-SELECT r.level, r.idx, CAST(r.n_entries AS BIGINT) AS n_entries,
-       r.min_key, r.max_key, r.full_ok,
-       coalesce(r.level = 0 OR r.min_key = ch.min_key, false)
-         AS sep_ok,
-       CAST((SELECT max(level) FROM cnt) + 1 AS INTEGER) AS height,
-       CAST((SELECT n FROM nn) AS BIGINT) AS n_keys,
-       (SELECT c FROM cnt WHERE level = (SELECT max(level) FROM cnt))
-         = 1 AS root_single_ok
-FROM res r
-LEFT JOIN res ch ON ch.level = r.level - 1 AND ch.idx = r.idx * 8
-"""
-
-
-@register("q_docs_bptree_bulkload", _BPTREE_SQL)
-def q_docs_bptree_bulkload(spark, sf_dir):
-    """B+-tree bulk load over the sorted document keys (leaf capacity 8,
-    fanout 8) — the index-build path every database uses for sorted
-    ingest, computed entirely in CLOSED FORM: node (L, i) covers key
-    ranks [8^(L+1)·i, 8^(L+1)·(i+1)), so per-node entry counts,
-    min/max keys and level populations are rank arithmetic plus one
-    rank→key join — no insertion replay, no recursion over keys (the
-    only recursion is the ≤5-row level-count sequence c_{i+1} =
-    ⌈c_i/8⌉). Pins per node: bulk-load full-fill (every node holds
-    exactly 8 entries except the last of its level), separator
-    correctness via a REAL parent-child join (each internal node's min
-    key equals its first child's min key), and the single-root
-    property. Emits the whole node directory — the page-level layout a
-    bulk loader would write — with height and key count as constants.
-    Rank windows + equi-joins: fully distributed, and the same closed
-    form holds at 10^9 keys per partition-local subtree."""
-    ks = (_t(spark, sf_dir, "documents")
-          .select("doc_id",
-                  (F.row_number().over(Window.orderBy("doc_id")) - 1)
-                  .alias("rk")))
-    n = ks.count()
-    counts, c, lvl = [], (n + 7) // 8, 0
-    while True:
-        counts.append((lvl, c))
-        if c <= 1:
-            break
-        c = (c + 7) // 8
-        lvl += 1
-    height = len(counts)
-    nodes = []
-    for L, cL in counts:
-        span = 8 ** (L + 1)
-        prev = n if L == 0 else counts[L - 1][1]
-        unit = 8
-        for i in range(cL):
-            ne = min(unit, prev - unit * i)
-            nodes.append((L, i, cL, span * i,
-                          min(n, span * (i + 1)) - 1, ne))
-    nd = spark.createDataFrame(
-        nodes, "level int, idx long, level_count long, lo_rk long,"
-               " hi_rk long, n_entries long")
-    res = (nd.join(F.broadcast(ks).withColumnRenamed("doc_id", "min_key")
-                   .withColumnRenamed("rk", "lo_rk2"),
-                   F.expr("lo_rk2 = lo_rk"))
-           .join(F.broadcast(ks).withColumnRenamed("doc_id", "max_key")
-                 .withColumnRenamed("rk", "hi_rk2"),
-                 F.expr("hi_rk2 = hi_rk"))
-           .select("level", "idx", "n_entries", "min_key", "max_key",
-                   ((F.col("n_entries") == 8)
-                    | (F.col("idx") == F.col("level_count") - 1))
-                   .alias("full_ok")))
-    ch = res.select(F.col("level").alias("cl"), F.col("idx").alias("ci"),
-                    F.col("min_key").alias("cmin"))
-    return (res.join(F.broadcast(ch),
-                     F.expr("cl = level - 1 AND ci = idx * 8"), "left")
-            .select("level", "idx",
-                    F.col("n_entries").cast("long").alias("n_entries"),
-                    "min_key", "max_key", "full_ok",
-                    F.coalesce((F.col("level") == 0)
-                               | (F.col("min_key") == F.col("cmin")),
-                               F.lit(False)).alias("sep_ok"),
-                    F.lit(height).cast("int").alias("height"),
-                    F.lit(n).cast("long").alias("n_keys"),
-                    F.lit(counts[-1][1] == 1).alias("root_single_ok")))
-
-
-_HAMMING_SQL = """
-WITH src AS (
-  SELECT doc_id, k,
-         ascii(substr(text, CAST(k AS INTEGER), 1)) % 16 AS nib,
-         CAST(concat('0x', substr(md5('he:' || CAST(doc_id AS VARCHAR)
-              || ':' || CAST(k AS VARCHAR)), 1, 15)) AS BIGINT) AS h
-  FROM documents, (SELECT unnest(range(1, 65)) AS k)
-  WHERE doc_id < 100 AND length(text) >= 64
-), enc AS (
-  SELECT doc_id, k, nib,
-         nib % 2 AS d1, (nib // 2) % 2 AS d2,
-         (nib // 4) % 2 AS d3, (nib // 8) % 2 AS d4,
-         k % 4 AS scenario, h
-  FROM src
-), cw AS (
-  SELECT *,
-         xor(xor(d1, d2), d4) AS p1,
-         xor(xor(d1, d3), d4) AS p2,
-         xor(xor(d2, d3), d4) AS p4
-  FROM enc
-), flip AS (
-  SELECT *,
-         xor(xor(xor(xor(xor(xor(p1, p2), d1), p4), d2), d3), d4)
-           AS p8,
-         CASE WHEN scenario = 1 THEN h % 8 + 1 ELSE 0 END AS f1,
-         CASE WHEN scenario = 2 THEN h % 8 + 1 ELSE 0 END AS f2a,
-         CASE WHEN scenario = 2
-           THEN (h % 8 + h // 8 % 7 + 1) % 8 + 1 ELSE 0 END AS f2b,
-         CASE WHEN scenario = 3 THEN 8 ELSE 0 END AS f3
-  FROM cw
-), rx AS (
-  SELECT doc_id, k, nib, scenario,
-         CASE WHEN f2a = 8 OR f2b = 8 OR f3 = 8 THEN xor(p8, 1)
-              WHEN f1 = 8 THEN xor(p8, 1) ELSE p8 END AS r8,
-         xor(p1, CASE WHEN f1 = 1 OR f2a = 1 OR f2b = 1
-                 THEN 1 ELSE 0 END) AS r1,
-         xor(p2, CASE WHEN f1 = 2 OR f2a = 2 OR f2b = 2
-                 THEN 1 ELSE 0 END) AS r2,
-         xor(d1, CASE WHEN f1 = 3 OR f2a = 3 OR f2b = 3
-                 THEN 1 ELSE 0 END) AS r3,
-         xor(p4, CASE WHEN f1 = 4 OR f2a = 4 OR f2b = 4
-                 THEN 1 ELSE 0 END) AS r4,
-         xor(d2, CASE WHEN f1 = 5 OR f2a = 5 OR f2b = 5
-                 THEN 1 ELSE 0 END) AS r5,
-         xor(d3, CASE WHEN f1 = 6 OR f2a = 6 OR f2b = 6
-                 THEN 1 ELSE 0 END) AS r6,
-         xor(d4, CASE WHEN f1 = 7 OR f2a = 7 OR f2b = 7
-                 THEN 1 ELSE 0 END) AS r7,
-         f1, f2a, f2b
-  FROM flip
-), syn AS (
-  SELECT *,
-         xor(xor(xor(r1, r3), r5), r7)
-         + 2 * xor(xor(xor(r2, r3), r6), r7)
-         + 4 * xor(xor(xor(r4, r5), r6), r7) AS s,
-         xor(xor(xor(xor(xor(xor(xor(r1, r2), r3), r4), r5), r6), r7),
-             r8) AS pchk
-  FROM rx
-), dec AS (
-  SELECT doc_id, k, nib, scenario, s, pchk, f1, f2a, f2b,
-         CASE WHEN s = 0 AND pchk = 1 THEN 'parity_fixed'
-              WHEN s = 0 THEN 'clean'
-              WHEN pchk = 1 THEN 'corrected'
-              ELSE 'double_detected' END
-           AS verdict,
-         CASE WHEN s > 0 AND pchk = 1 THEN
-           (CASE WHEN s = 3 THEN xor(r3, 1) ELSE r3 END)
-           + 2 * (CASE WHEN s = 5 THEN xor(r5, 1) ELSE r5 END)
-           + 4 * (CASE WHEN s = 6 THEN xor(r6, 1) ELSE r6 END)
-           + 8 * (CASE WHEN s = 7 THEN xor(r7, 1) ELSE r7 END)
-         ELSE r3 + 2 * r5 + 4 * r6 + 8 * r7 END AS decoded
-  FROM syn
-)
-SELECT doc_id, CAST(k AS INTEGER) AS k, CAST(nib AS INTEGER) AS nib,
-       CAST(scenario AS INTEGER) AS scenario,
-       CAST(s AS INTEGER) AS syndrome, CAST(pchk AS INTEGER) AS pchk,
-       verdict, CAST(decoded AS INTEGER) AS decoded,
-       CASE WHEN scenario = 2 THEN verdict = 'double_detected'
-            ELSE decoded = nib END AS secded_ok,
-       (scenario <> 1 OR f1 = 8 OR s = f1) AS syndrome_locates_ok
-FROM dec
-"""
-
-
-@register("data_hamming_secded", _HAMMING_SQL)
-def data_hamming_secded(spark, sf_dir):
-    """Hamming(7,4) + SECDED(8,4) — the single-error-correct /
-    double-error-detect code inside ECC RAM and storage checksums —
-    over the low nibbles of the first 64 characters of 100 documents,
-    with all four error scenarios planted per stripe (k mod 4): clean,
-    one md5-chosen bit flip anywhere in the 8-bit codeword, TWO
-    distinct flips, and a flip of the overall parity bit itself. The
-    SECDED contract is pinned per codeword: clean/single/parity-flip
-    rows must decode back to the original nibble (single errors
-    corrected AT the syndrome position — syndrome_locates_ok pins that
-    the syndrome equals the planted bit index), and double flips must
-    be DETECTED, never silently miscorrected. Pure bit arithmetic in
-    both engines (xor + integer div/mod — no bitmaps, no UDFs),
-    map-side over (doc, position): the embarrassingly parallel shape
-    of block-level integrity checking at any scale."""
-    docs = (_t(spark, sf_dir, "documents")
-            .filter((F.col("doc_id") < 100) & (F.length("text") >= 64)))
-    ks = spark.range(1, 65).select(F.col("id").cast("int").alias("k"))
-    src = (docs.crossJoin(F.broadcast(ks))
-           .select("doc_id", "k",
-                   (F.ascii(F.expr("substr(text, k, 1)")) % 16)
-                   .alias("nib"),
-                   F.conv(F.substring(F.md5(F.concat_ws(
-                       "", F.lit("he:"), F.col("doc_id").cast("string"),
-                       F.lit(":"), F.col("k").cast("string"))), 1, 15),
-                       16, 10).cast("long").alias("h")))
-    q = src.selectExpr(
-        "doc_id", "k", "nib", "h",
-        "nib % 2 AS d1", "(nib div 2) % 2 AS d2",
-        "(nib div 4) % 2 AS d3", "(nib div 8) % 2 AS d4",
-        "k % 4 AS scenario")
-    q = q.selectExpr(
-        "*", "d1 ^ d2 ^ d4 AS p1", "d1 ^ d3 ^ d4 AS p2",
-        "d2 ^ d3 ^ d4 AS p4")
-    q = q.selectExpr(
-        "*", "p1 ^ p2 ^ d1 ^ p4 ^ d2 ^ d3 ^ d4 AS p8",
-        "CASE WHEN scenario = 1 THEN h % 8 + 1 ELSE 0 END AS f1",
-        "CASE WHEN scenario = 2 THEN h % 8 + 1 ELSE 0 END AS f2a",
-        "CASE WHEN scenario = 2 THEN (h % 8 + h div 8 % 7 + 1) % 8 + 1"
-        " ELSE 0 END AS f2b",
-        "CASE WHEN scenario = 3 THEN 8 ELSE 0 END AS f3")
-    q = q.selectExpr(
-        "doc_id", "k", "nib", "scenario", "f1", "f2a", "f2b",
-        "CASE WHEN f2a = 8 OR f2b = 8 OR f3 = 8 THEN p8 ^ 1"
-        " WHEN f1 = 8 THEN p8 ^ 1 ELSE p8 END AS r8",
-        "p1 ^ (CASE WHEN f1 = 1 OR f2a = 1 OR f2b = 1 THEN 1 ELSE 0"
-        " END) AS r1",
-        "p2 ^ (CASE WHEN f1 = 2 OR f2a = 2 OR f2b = 2 THEN 1 ELSE 0"
-        " END) AS r2",
-        "d1 ^ (CASE WHEN f1 = 3 OR f2a = 3 OR f2b = 3 THEN 1 ELSE 0"
-        " END) AS r3",
-        "p4 ^ (CASE WHEN f1 = 4 OR f2a = 4 OR f2b = 4 THEN 1 ELSE 0"
-        " END) AS r4",
-        "d2 ^ (CASE WHEN f1 = 5 OR f2a = 5 OR f2b = 5 THEN 1 ELSE 0"
-        " END) AS r5",
-        "d3 ^ (CASE WHEN f1 = 6 OR f2a = 6 OR f2b = 6 THEN 1 ELSE 0"
-        " END) AS r6",
-        "d4 ^ (CASE WHEN f1 = 7 OR f2a = 7 OR f2b = 7 THEN 1 ELSE 0"
-        " END) AS r7")
-    q = q.selectExpr(
-        "*",
-        "(r1 ^ r3 ^ r5 ^ r7) + 2 * (r2 ^ r3 ^ r6 ^ r7)"
-        " + 4 * (r4 ^ r5 ^ r6 ^ r7) AS s",
-        "r1 ^ r2 ^ r3 ^ r4 ^ r5 ^ r6 ^ r7 ^ r8 AS pchk")
-    q = q.selectExpr(
-        "doc_id", "k", "nib", "scenario", "s", "pchk", "f1",
-        "CASE WHEN s = 0 AND pchk = 1 THEN 'parity_fixed'"
-        " WHEN s = 0 THEN 'clean' WHEN pchk = 1 THEN 'corrected'"
-        " ELSE 'double_detected' END AS verdict",
-        "CASE WHEN s > 0 AND pchk = 1 THEN"
-        " (CASE WHEN s = 3 THEN r3 ^ 1 ELSE r3 END)"
-        " + 2 * (CASE WHEN s = 5 THEN r5 ^ 1 ELSE r5 END)"
-        " + 4 * (CASE WHEN s = 6 THEN r6 ^ 1 ELSE r6 END)"
-        " + 8 * (CASE WHEN s = 7 THEN r7 ^ 1 ELSE r7 END)"
-        " ELSE r3 + 2 * r5 + 4 * r6 + 8 * r7 END AS decoded")
-    return q.selectExpr(
-        "doc_id", "CAST(k AS INT) AS k", "CAST(nib AS INT) AS nib",
-        "CAST(scenario AS INT) AS scenario", "CAST(s AS INT) AS syndrome",
-        "CAST(pchk AS INT) AS pchk", "verdict",
-        "CAST(decoded AS INT) AS decoded",
-        "CASE WHEN scenario = 2 THEN verdict = 'double_detected'"
-        " ELSE decoded = nib END AS secded_ok",
-        "(scenario <> 1 OR f1 = 8 OR s = f1) AS syndrome_locates_ok")
-
-
-# ---- Reed-Solomon RS(6,4) erasure coding over GF(256), poly 0x11d ----
-
-_GF_EXP = [0] * 256
-_GF_LOG = [0] * 256
-
-
-def _gf_init():
-    x = 1
-    for i in range(255):
-        _GF_EXP[i] = x
-        _GF_LOG[x] = i
-        x <<= 1
-        if x >= 256:
-            x ^= 0x11D
-    _GF_EXP[255] = _GF_EXP[0]
-
-
-_gf_init()
-
-
-def _gf_mul(a: int, b: int) -> int:
-    if a == 0 or b == 0:
-        return 0
-    return _GF_EXP[(_GF_LOG[a] + _GF_LOG[b]) % 255]
-
-
-def _gf_inv(a: int) -> int:
-    return _GF_EXP[(255 - _GF_LOG[a]) % 255]
-
-
-def _rs_constants():
-    """Code-structure constants shared by engine and oracle: the
-    Vandermonde generator row logs, the md5-chosen erasure pair, and
-    the Lagrange recovery/re-encode coefficient logs for that pair."""
-    import hashlib as _h
-    xs = [j + 1 for j in range(6)]                   # evaluation points
-    gen = [[pow_ for i in range(4)
-            for pow_ in [_gf_pow(xs[j], i)]] for j in range(6)]
-    h = int(_h.md5(b"rs:erasure").hexdigest()[:15], 16)
-    e1 = h % 6
-    e2 = (e1 + h // 6 % 5 + 1) % 6
-    surv = [j for j in range(6) if j not in (e1, e2)]
-    # Lagrange: data coeffs d_i = XOR_r L[r][i] * S_r over survivors
-    ys = [xs[j] for j in surv]
-    L = [[0] * 4 for _ in range(4)]
-    for r in range(4):
-        oth = [ys[t] for t in range(4) if t != r]
-        a, b, c = oth
-        sym = [_gf_mul(_gf_mul(a, b), c),
-               _gf_mul(a, b) ^ _gf_mul(b, c) ^ _gf_mul(c, a),
-               a ^ b ^ c, 1]
-        den = 1
-        for t in oth:
-            den = _gf_mul(den, ys[r] ^ t)
-        dinv = _gf_inv(den)
-        for i in range(4):
-            L[r][i] = _gf_mul(sym[i], dinv)
-    return xs, gen, e1, e2, surv, L
-
-
-def _gf_pow(x: int, e: int) -> int:
-    r = 1
-    for _ in range(e):
-        r = _gf_mul(r, x)
-    return r
-
-
-def _rs_gmul_sql(const: int, expr: str) -> str:
-    """SQL for gf_mul(const, expr) with a compile-time constant: one
-    log-table hop — el[ (log_const + log expr) mod 255 + 1 ]."""
-    if const == 0:
-        return "0"
-    lc = _GF_LOG[const]
-    if const == 1:
-        return f"({expr})"
-    return (f"(CASE WHEN ({expr}) = 0 THEN 0 ELSE "
-            f"el[CAST(({lc} + list_position(el, {expr}) - 1) % 255 + 1"
-            f" AS INTEGER)] END)")
-
-
-def _rs_sql() -> str:
-    xs, gen, e1, e2, surv, L = _rs_constants()
-    enc_cols = []
-    for j in range(6):
-        terms = [_rs_gmul_sql(gen[j][i], f"d{i}") for i in range(4)]
-        enc_cols.append(
-            f"xor(xor({terms[0]}, {terms[1]}),"
-            f" xor({terms[2]}, {terms[3]})) AS s{j}")
-    rec_cols = []
-    for i in range(4):
-        terms = [_rs_gmul_sql(L[r][i], f"s{surv[r]}") for r in range(4)]
-        rec_cols.append(
-            f"xor(xor({terms[0]}, {terms[1]}),"
-            f" xor({terms[2]}, {terms[3]})) AS rec{i}")
-    reenc = []
-    for nm, ej in (("re1", e1), ("re2", e2)):
-        terms = [_rs_gmul_sql(gen[ej][i], f"rec{i}") for i in range(4)]
-        reenc.append(
-            f"xor(xor({terms[0]}, {terms[1]}),"
-            f" xor({terms[2]}, {terms[3]})) AS {nm}")
-    return f"""
-WITH RECURSIVE gf AS (
-  SELECT 0 AS i, [CAST(1 AS BIGINT)] AS e
-  UNION ALL
-  SELECT i + 1, e || [CASE WHEN e[CAST(i + 1 AS INTEGER)] * 2 >= 256
-    THEN xor(e[CAST(i + 1 AS INTEGER)] * 2, 285)
-    ELSE e[CAST(i + 1 AS INTEGER)] * 2 END]
-  FROM gf WHERE i < 254
-), el_t AS (
-  SELECT e AS el FROM gf WHERE i = 254
-), doc AS (
-  SELECT string_agg(text, ' ' ORDER BY doc_id) AS text
-  FROM (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT 5)
-), data AS (
-  SELECT k.k,
-         ascii(substr(d.text, CAST(0 * 64 + k.k + 1 AS INTEGER), 1))
-           AS d0,
-         ascii(substr(d.text, CAST(1 * 64 + k.k + 1 AS INTEGER), 1))
-           AS d1,
-         ascii(substr(d.text, CAST(2 * 64 + k.k + 1 AS INTEGER), 1))
-           AS d2,
-         ascii(substr(d.text, CAST(3 * 64 + k.k + 1 AS INTEGER), 1))
-           AS d3,
-         el_t.el AS el
-  FROM doc d, (SELECT unnest(range(0, 64)) AS k) k, el_t
-), enc AS (
-  SELECT k, d0, d1, d2, d3, el,
-         {', '.join(enc_cols)}
-  FROM data
-), rec AS (
-  SELECT k, d0, d1, d2, d3, s0, s1, s2, s3, s4, s5, el,
-         {', '.join(rec_cols)}
-  FROM enc
-), ree AS (
-  SELECT *, {', '.join(reenc)}
-  FROM rec
-)
-SELECT CAST(k AS INTEGER) AS k,
-       CAST(d0 AS INTEGER) AS d0, CAST(d1 AS INTEGER) AS d1,
-       CAST(d2 AS INTEGER) AS d2, CAST(d3 AS INTEGER) AS d3,
-       CAST(s0 AS INTEGER) AS s0, CAST(s1 AS INTEGER) AS s1,
-       CAST(s2 AS INTEGER) AS s2, CAST(s3 AS INTEGER) AS s3,
-       CAST(s4 AS INTEGER) AS s4, CAST(s5 AS INTEGER) AS s5,
-       CAST({e1} AS INTEGER) AS erased1, CAST({e2} AS INTEGER)
-         AS erased2,
-       CAST(rec0 AS INTEGER) AS rec0, CAST(rec1 AS INTEGER) AS rec1,
-       CAST(rec2 AS INTEGER) AS rec2, CAST(rec3 AS INTEGER) AS rec3,
-       (rec0 = d0 AND rec1 = d1 AND rec2 = d2 AND rec3 = d3)
-         AS recover_ok,
-       (re1 = s{e1} AND re2 = s{e2}) AS reencode_ok
-FROM ree
-"""
-
-
-@register("data_rs_erasure", _rs_sql())
-def data_rs_erasure(spark, sf_dir):
-    """Reed-Solomon RS(6,4) erasure coding over GF(256) (poly 0x11d,
-    α=2) — the MDS code behind HDFS/S3/Ceph erasure-coded storage: 256
-    bytes of the first document split into 4 data shards, encoded into
-    6 by a Vandermonde evaluation at x=1..6 (any 4 of 6 rows
-    invertible — the MDS property), two md5-chosen shards ERASED, and
-    the data recovered from the survivors by Lagrange interpolation in
-    closed form — characteristic 2 kills every sign, so the recovery
-    coefficients are elementary symmetric polynomials over the
-    surviving nodes divided by Π(y_r − y_t), no Gaussian elimination
-    anywhere. Pinned per byte position: exact recovery of all four
-    data bytes from 4-of-6 (recover_ok — the erasure-tolerance
-    contract) and re-encoding the recovered data reproduces the two
-    erased shards bit-exactly (reencode_ok — consistency of the code).
-    The oracle builds the GF(256) exp table by a 255-step xtime
-    recursion and runs every multiply through one log-hop with
-    compile-time coefficient logs; the engine computes the same field
-    arithmetic in integer Python. Per-position math is embarrassingly
-    parallel — the per-stripe shape of erasure-coded object storage."""
-    txt = " ".join(
-        r["text"] for r in _t(spark, sf_dir, "documents")
-        .orderBy("doc_id").limit(5).collect())
-    xs, gen, e1, e2, surv, L = _rs_constants()
-    rows = []
-    for k in range(64):
-        d = [ord(txt[i * 64 + k]) for i in range(4)]
-        s = [0] * 6
-        for j in range(6):
-            acc = 0
-            for i in range(4):
-                acc ^= _gf_mul(gen[j][i], d[i])
-            s[j] = acc
-        rec = [0] * 4
-        for i in range(4):
-            acc = 0
-            for r in range(4):
-                acc ^= _gf_mul(L[r][i], s[surv[r]])
-            rec[i] = acc
-        re_ = []
-        for ej in (e1, e2):
-            acc = 0
-            for i in range(4):
-                acc ^= _gf_mul(gen[ej][i], rec[i])
-            re_.append(acc)
-        rows.append((k, d[0], d[1], d[2], d[3],
-                     s[0], s[1], s[2], s[3], s[4], s[5], e1, e2,
-                     rec[0], rec[1], rec[2], rec[3],
-                     rec == d, re_[0] == s[e1] and re_[1] == s[e2]))
-    return spark.createDataFrame(
-        rows, "k int, d0 int, d1 int, d2 int, d3 int, s0 int, s1 int,"
-              " s2 int, s3 int, s4 int, s5 int, erased1 int,"
-              " erased2 int, rec0 int, rec1 int, rec2 int, rec3 int,"
-              " recover_ok boolean, reencode_ok boolean")
-
-
-_CHBL_SQL = """
-WITH RECURSIVE uk AS (
-  SELECT CAST(user_id AS VARCHAR) AS uid
-  FROM (SELECT DISTINCT user_id FROM events
-        ORDER BY user_id LIMIT 200)
-), uh AS (
-  SELECT uid,
-         CAST(concat('0x', substr(md5('key:' || uid), 1, 15))
-              AS BIGINT) AS h
-  FROM uk
-), vn AS (
-  SELECT n.node, n.ni,
-         CAST(concat('0x', substr(md5('vnode:' || n.node || ':'
-              || CAST(v.v AS VARCHAR)), 1, 15)) AS BIGINT) AS p
-  FROM (VALUES ('n0', 0), ('n1', 1), ('n2', 2), ('n3', 3), ('n4', 4))
-       n(node, ni)
-  CROSS JOIN (SELECT unnest(range(0, 16)) AS v) v
-), dist AS (
-  SELECT uh.uid, uh.h, vn.ni,
-         min((vn.p - uh.h + 1152921504606846976)
-             % 1152921504606846976) AS d
-  FROM uh CROSS JOIN vn GROUP BY uh.uid, uh.h, vn.ni
-), pref AS (
-  SELECT uid, h, list(ni ORDER BY d) AS pf
-  FROM dist GROUP BY uid, h
-), seq AS (
-  SELECT uid, pf, row_number() OVER (ORDER BY CAST(uid AS BIGINT)) AS rn
-  FROM pref
-), kk AS (
-  SELECT count(*) AS nk,
-         (count(*) + 3) // 4 AS cap   -- ceil(1.25 * K / 5) = ceil(K/4)
-  FROM uk
-), st AS (
-  SELECT 0 AS t, list_transform(range(1, 6), x -> CAST(0 AS BIGINT))
-           AS loads,
-         CAST(NULL AS BIGINT) AS chosen, CAST(NULL AS INTEGER) AS rank_,
-         (SELECT cap FROM kk) AS cap
-  UNION ALL
-  SELECT s.t + 1, t2.nl, t2.ch, t2.rk, s.cap
-  FROM st s
-  JOIN seq q ON q.rn = s.t + 1
-  CROSS JOIN LATERAL (
-    SELECT list_min(list_filter(
-             list_transform(q.pf, (n, i) -> CASE
-               WHEN s.loads[CAST(n + 1 AS INTEGER)] < s.cap
-               THEN i * 10 + n ELSE NULL END),
-             x -> x IS NOT NULL)) AS code) t1
-  CROSS JOIN LATERAL (
-    SELECT t1.code % 10 AS ch, CAST(t1.code // 10 AS INTEGER) AS rk,
-           list_transform(s.loads, (l, i) -> CASE
-             WHEN i = t1.code % 10 + 1 THEN l + 1 ELSE l END) AS nl
-    ) t2
-  WHERE s.t < (SELECT nk FROM kk)
-), placed AS (
-  SELECT s.t, q.uid, s.chosen, s.rank_
-  FROM st s JOIN seq q ON q.rn = s.t
-  WHERE s.t >= 1
-), finl AS (
-  SELECT loads FROM st WHERE t = (SELECT nk FROM kk)
-)
-SELECT CAST(p.uid AS BIGINT) AS user_id,
-       'n' || CAST(p.chosen AS VARCHAR) AS node,
-       p.rank_ AS choice_rank,
-       CAST((SELECT cap FROM kk) AS BIGINT) AS cap,
-       CAST(f.loads[CAST(p.chosen + 1 AS INTEGER)] AS BIGINT)
-         AS node_load,
-       f.loads[CAST(p.chosen + 1 AS INTEGER)]
-         <= (SELECT cap FROM kk) AS cap_ok,
-       CAST(list_max(f.loads) AS BIGINT) AS max_load,
-       list_max(f.loads) <= (SELECT cap FROM kk) AS all_caps_ok,
-       CAST(f.loads[1] + f.loads[2] + f.loads[3] + f.loads[4]
-            + f.loads[5] AS BIGINT) AS total_placed,
-       f.loads[1] + f.loads[2] + f.loads[3] + f.loads[4] + f.loads[5]
-         = (SELECT nk FROM kk) AS conservation_ok
-FROM placed p CROSS JOIN finl f
-"""
-
-
-@register("q_shard_bounded_loads", _CHBL_SQL)
-def q_shard_bounded_loads(spark, sf_dir):
-    """Consistent hashing with bounded loads (Mirrokni-Thorup-Zadimoghaddam,
-    the Vitess/HAProxy variant): each key walks its ring-successor node
-    preference list (clockwise over the same 16-vnode/60-bit-md5 ring
-    as q_shard_placement_ring, nodes deduped by first vnode hit) and
-    lands on the FIRST node under the capacity ceiling ⌈1.25·K/5⌉ —
-    the cap that tames the Θ(log n/log log n) max-load of plain
-    consistent hashing to a constant factor. The guarantee is pinned
-    from the final state: no node exceeds the cap (all_caps_ok), every
-    key is placed (conservation), and each key's fallback depth
-    (choice_rank) is emitted so the overflow-walk distribution — the
-    price of boundedness — is visible in the result. Preference lists
-    are a distributed window+group computation (per-key min distance
-    per node, ranked); only the 200-step load fold is sequential, the
-    same bounded planner walk a router replays. Engine: driver fold;
-    oracle: identical recursion over the 5-slot load vector."""
-    import hashlib as _h
-
-    def h60(s):
-        return int(_h.md5(s.encode()).hexdigest()[:15], 16)
-    M = 1 << 60
-    uids = sorted(int(r["user_id"]) for r in
-                  _t(spark, sf_dir, "events")
-                  .select("user_id").distinct()
-                  .orderBy("user_id").limit(200).collect())
-    vns = [(ni, h60(f"vnode:n{ni}:{v}"))
-           for ni in range(5) for v in range(16)]
-    K = len(uids)
-    cap = (K + 3) // 4
-    loads = [0] * 5
-    out = []
-    for uid in uids:
-        h = h60(f"key:{uid}")
-        best = {}
-        for ni, p in vns:
-            d = (p - h + M) % M
-            if ni not in best or d < best[ni]:
-                best[ni] = d
-        pf = [ni for ni, _ in sorted(best.items(), key=lambda x: x[1])]
-        rk, ch = next((i + 1, n) for i, n in enumerate(pf)
-                      if loads[n] < cap)
-        loads[ch] += 1
-        out.append((uid, ch, rk))
-    total = sum(loads)
-    rows = [(uid, f"n{ch}", rk, cap, loads[ch], loads[ch] <= cap,
-             max(loads), max(loads) <= cap, total, total == K)
-            for uid, ch, rk in out]
-    return spark.createDataFrame(
-        rows, "user_id long, node string, choice_rank int, cap long,"
-              " node_load long, cap_ok boolean, max_load long,"
-              " all_caps_ok boolean, total_placed long,"
-              " conservation_ok boolean")
 
 
 _LENBATCH_SQL = """
@@ -43808,5497 +8170,3 @@ def _lb_batches(toks):
             cnt, mx = 1, t
         out.append(batch)
     return out
-
-
-# ---- Selinger join-order DP over the real TPC-H chain ----
-
-_SEL_TABLES = ["R", "N", "C", "O", "L"]
-_SEL_SEGS = [(i, j) for i in range(5) for j in range(i, 5)]
-
-
-def _sel_components(mask: int):
-    """Maximal runs of consecutive set bits of mask (chain components)."""
-    comps, i = [], 0
-    while i < 5:
-        if mask >> i & 1:
-            j = i
-            while j + 1 < 5 and mask >> (j + 1) & 1:
-                j += 1
-            comps.append((i, j))
-            i = j + 1
-        else:
-            i += 1
-    return comps
-
-
-def _sel_card_expr(mask: int) -> str:
-    return " * ".join(f"seg{i}{j}" for i, j in _sel_components(mask))
-
-
-def _sel_perms():
-    import itertools
-    return list(itertools.permutations(range(5)))
-
-
-def _selinger_sql() -> str:
-    seg_sql = {
-        (0, 0): "SELECT count(*) FROM region",
-        (1, 1): "SELECT count(*) FROM nation",
-        (2, 2): "SELECT count(*) FROM customer"
-                " WHERE c_mktsegment = 'BUILDING'",
-        (3, 3): "SELECT count(*) FROM orders"
-                " WHERE o_orderpriority = '1-URGENT'",
-        (4, 4): "SELECT count(*) FROM lineitem WHERE l_quantity >= 25",
-    }
-    frm = {
-        0: "region",
-        1: "nation",
-        2: "(SELECT * FROM customer WHERE c_mktsegment = 'BUILDING')"
-           " c",
-        3: "(SELECT * FROM orders WHERE o_orderpriority = '1-URGENT')"
-           " o",
-        4: "(SELECT * FROM lineitem WHERE l_quantity >= 25) l",
-    }
-    joins = {
-        (0, 1): "r_regionkey = n_regionkey",
-        (1, 2): "n_nationkey = c_nationkey",
-        (2, 3): "c_custkey = o_custkey",
-        (3, 4): "o_orderkey = l_orderkey",
-    }
-    for i, j in _SEL_SEGS:
-        if i == j:
-            continue
-        f = frm[i]
-        conds = []
-        for t in range(i + 1, j + 1):
-            f += f" JOIN {frm[t]} ON {joins[(t - 1, t)]}"
-        seg_sql[(i, j)] = f"SELECT count(*) FROM {f}"
-    seg_cols = ", ".join(
-        f"({seg_sql[(i, j)]}) AS seg{i}{j}" for i, j in _SEL_SEGS)
-    card_cols = ", ".join(
-        f"CAST({_sel_card_expr(m)} AS BIGINT) AS card{m}"
-        for m in range(1, 32))
-    # DP in popcount order; cost of singletons is 0
-    cost, plan = {}, {}
-    for t in range(5):
-        cost[1 << t] = "0"
-        plan[1 << t] = f"'{_SEL_TABLES[t]}'"
-    dp_cols = []
-    for size in range(2, 6):
-        for m in range(1, 32):
-            if bin(m).count("1") != size:
-                continue
-            cands = []
-            for t in range(5):
-                if m >> t & 1:
-                    pm = m ^ (1 << t)
-                    cands.append((t, f"({cost[pm]} + card{m})",
-                                  f"({plan[pm]} || '>' ||"
-                                  f" '{_SEL_TABLES[t]}')"))
-            cexpr = "least(" + ", ".join(c for _, c, _ in cands) + ")"
-            # deterministic argmin: first candidate (ascending t)
-            # attaining the least
-            pexpr = "CASE "
-            for t, c, p in cands:
-                pexpr += f"WHEN {c} = {cexpr} THEN {p} "
-            pexpr = pexpr.rstrip() + " END"
-            cost[m] = f"cost{m}"
-            plan[m] = f"plan{m}"
-            dp_cols.append(f"CAST({cexpr} AS BIGINT) AS cost{m}")
-            dp_cols.append(f"{pexpr} AS plan{m}")
-    # the dp CTE must see earlier cost/plan columns: chain by popcount
-    dp_ctes, prev = [], "cards"
-    for size in range(2, 6):
-        cols = []
-        for m in range(1, 32):
-            if bin(m).count("1") != size:
-                continue
-            idx = [i for i, c in enumerate(dp_cols)
-                   if c.endswith(f"AS cost{m}") or c.endswith(
-                       f"AS plan{m}")]
-            cols.extend(dp_cols[i] for i in idx)
-        dp_ctes.append(
-            f"dp{size} AS (SELECT *, {', '.join(cols)} FROM {prev})")
-        prev = f"dp{size}"
-    # brute force over the 120 left-deep orders
-    pcosts = []
-    for perm in _sel_perms():
-        msk, terms = 0, []
-        for k, t in enumerate(perm):
-            msk |= 1 << t
-            if k >= 1:
-                terms.append(f"card{msk}")
-        pcosts.append("(" + " + ".join(terms) + ")")
-    brute_min = "least(" + ", ".join(pcosts) + ")"
-    brute_max = "greatest(" + ", ".join(pcosts) + ")"
-    rows = []
-    for m in range(1, 32):
-        tbls = "".join(_SEL_TABLES[t] for t in range(5) if m >> t & 1)
-        c = cost[m] if bin(m).count("1") > 1 else "CAST(0 AS BIGINT)"
-        p = plan[m]
-        rows.append(
-            f"SELECT {m} AS mask, '{tbls}' AS tables,"
-            f" card{m} AS cardinality, CAST({c} AS BIGINT) AS best_cost,"
-            f" {p} AS best_plan, cost31 AS full_best,"
-            f" CAST({brute_min} AS BIGINT) AS brute_min,"
-            f" cost31 = {brute_min} AS dp_equals_brute,"
-            f" CAST({brute_max} AS BIGINT) AS worst_perm,"
-            f" CAST({brute_max} * 100 // cost31 AS BIGINT)"
-            f" AS worst_over_best_e2 FROM dp5")
-    return (f"WITH segs AS (SELECT {seg_cols}), "
-            f"cards AS (SELECT *, {card_cols} FROM segs), "
-            + ", ".join(dp_ctes) + " "
-            + " UNION ALL ".join(rows))
-
-
-@register("q_join_order_selinger", _selinger_sql())
-def q_join_order_selinger(spark, sf_dir):
-    """Selinger dynamic-programming join ordering (System R, the
-    algorithm inside every cost-based SQL optimizer) over the REAL
-    five-table TPC-H chain region-nation-customer-orders-lineitem with
-    genuine data-derived cardinalities: base filters (BUILDING
-    customers, 1-URGENT orders, quantity >= 25 lineitems) break FK
-    totality, the 15 connected sub-chain cardinalities are measured by
-    actual joins, and every disconnected subset costs the honest
-    cartesian product of its components. The DP minimizes the classic
-    sum-of-intermediate-cardinalities cost over left-deep orders and is
-    PINNED exactly optimal against a full brute-force enumeration of
-    all 120 join orders computed independently in both engines
-    (dp_equals_brute) — with the worst order's cost ratio emitted, the
-    number that is the entire reason cost-based optimizers exist. All
-    31 subsets are emitted with their best cost and argmin plan
-    (deterministic first-attaining tiebreak). The cardinality probes
-    are the distributed part (15 real join counts); the 32-state DP is
-    O(1) planner work, exactly where Catalyst runs it."""
-    # ONE action: the oracle's segs CTE verbatim over temp views, so
-    # all 15 sub-chain counts land in a single Spark job
-    for t in ("region", "nation", "customer", "orders", "lineitem"):
-        _t(spark, sf_dir, t).createOrReplaceTempView(f"_sel_{t}")
-    seg_select = _selinger_sql()
-    seg_select = seg_select[seg_select.index("WITH segs AS (SELECT ")
-                            + len("WITH segs AS (SELECT "):]
-    seg_select = seg_select[:seg_select.index("), cards AS")]
-    for t in ("region", "nation", "customer", "orders", "lineitem"):
-        seg_select = seg_select.replace(f"FROM {t}", f"FROM _sel_{t}")
-        seg_select = seg_select.replace(f"JOIN {t}", f"JOIN _sel_{t}")
-    row = spark.sql("SELECT " + seg_select).collect()[0]
-    seg = {(i, j): int(row[f"seg{i}{j}"]) for i, j in _SEL_SEGS}
-    card = {}
-    for m in range(1, 32):
-        v = 1
-        for comp in _sel_components(m):
-            v *= seg[comp]
-        card[m] = v
-    cost = {1 << t: 0 for t in range(5)}
-    plan = {1 << t: _SEL_TABLES[t] for t in range(5)}
-    for size in range(2, 6):
-        for m in range(1, 32):
-            if bin(m).count("1") != size:
-                continue
-            best = None
-            for t in range(5):
-                if m >> t & 1:
-                    pm = m ^ (1 << t)
-                    cand = cost[pm] + card[m]
-                    if best is None or cand < best[0]:
-                        best = (cand, plan[pm] + ">" + _SEL_TABLES[t])
-            cost[m], plan[m] = best
-    import itertools
-    pc = []
-    for perm in itertools.permutations(range(5)):
-        msk, tot = 0, 0
-        for k, t in enumerate(perm):
-            msk |= 1 << t
-            if k >= 1:
-                tot += card[msk]
-        pc.append(tot)
-    brute_min, brute_max = min(pc), max(pc)
-    rows = []
-    for m in range(1, 32):
-        tbls = "".join(_SEL_TABLES[t] for t in range(5) if m >> t & 1)
-        rows.append((m, tbls, card[m],
-                     cost[m] if bin(m).count("1") > 1 else 0, plan[m],
-                     cost[31], brute_min, cost[31] == brute_min,
-                     brute_max, brute_max * 100 // cost[31]))
-    return spark.createDataFrame(
-        rows, "mask int, tables string, cardinality long,"
-              " best_cost long, best_plan string, full_best long,"
-              " brute_min long, dp_equals_brute boolean,"
-              " worst_perm long, worst_over_best_e2 long")
-
-
-_TA_SQL = """
-WITH sc AS (
-  SELECT user_id,
-         sum(CASE WHEN event_type = 'click'
-             THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
-             ELSE 0 END) AS s1,
-         sum(CASE WHEN event_type = 'purchase'
-             THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
-             ELSE 0 END) AS s2
-  FROM events GROUP BY user_id
-), rk AS (
-  SELECT user_id, s1, s2, s1 + s2 AS total,
-         row_number() OVER (ORDER BY s1 DESC, user_id) AS r1,
-         row_number() OVER (ORDER BY s2 DESC, user_id) AS r2
-  FROM sc
-), nn AS (
-  SELECT count(*) AS n, least(count(*), 200) AS dmax FROM rk
-), steps AS (
-  SELECT CAST(unnest(range(1, (SELECT dmax FROM nn) + 1)) AS BIGINT)
-    AS d
-), th AS (
-  SELECT s.d, a.user_id AS u1, a.s1 AS v1, b.user_id AS u2,
-         b.s2 AS v2, a.s1 + b.s2 AS threshold
-  FROM steps s
-  JOIN rk a ON a.r1 = s.d
-  JOIN rk b ON b.r2 = s.d
-), seen AS (
-  SELECT s.d, r.user_id, r.total,
-         row_number() OVER (PARTITION BY s.d
-                            ORDER BY r.total DESC, r.user_id) AS rn
-  FROM steps s JOIN rk r ON least(r.r1, r.r2) <= s.d
-), kb AS (
-  SELECT d, max(CASE WHEN rn = 5 THEN total END) AS kth
-  FROM seen GROUP BY d
-), st AS (
-  SELECT th.d, th.u1, th.v1, th.u2, th.v2, th.threshold, kb.kth,
-         kb.kth IS NOT NULL AND kb.kth >= th.threshold AS stopped
-  FROM th JOIN kb ON kb.d = th.d
-), stp AS (
-  SELECT coalesce(min(d) FILTER (WHERE stopped),
-                  (SELECT dmax FROM nn)) AS stop_d
-  FROM st
-), top5 AS (
-  SELECT string_agg(CAST(user_id AS VARCHAR) || ':'
-                    || CAST(total AS VARCHAR), ',' ORDER BY rn)
-    AS ta_top5
-  FROM seen
-  WHERE d = (SELECT stop_d FROM stp) AND rn <= 5
-), brute AS (
-  SELECT string_agg(CAST(user_id AS VARCHAR) || ':'
-                    || CAST(total AS VARCHAR), ',' ORDER BY rn) AS b5
-  FROM (SELECT user_id, total,
-               row_number() OVER (ORDER BY total DESC, user_id) AS rn
-        FROM rk)
-  WHERE rn <= 5
-)
-SELECT CAST(s.d AS INTEGER) AS d, s.u1, CAST(s.v1 AS BIGINT) AS v1,
-       s.u2, CAST(s.v2 AS BIGINT) AS v2,
-       CAST(s.threshold AS BIGINT) AS threshold,
-       CAST(s.kth AS BIGINT) AS kth_best, s.stopped,
-       CAST((SELECT stop_d FROM stp) AS INTEGER) AS stop_step,
-       CAST((SELECT n FROM nn) AS BIGINT) AS n_users,
-       (SELECT ta_top5 FROM top5) AS ta_top5,
-       (SELECT b5 FROM brute) AS brute_top5,
-       (SELECT ta_top5 FROM top5) = (SELECT b5 FROM brute)
-         AS ta_exact_ok,
-       (SELECT stop_d FROM stp) < (SELECT n FROM nn)
-         AS early_stop
-FROM st s WHERE s.d <= (SELECT stop_d FROM stp)
-"""
-
-
-@register("q_events_ta_topk", _TA_SQL)
-def q_events_ta_topk(spark, sf_dir):
-    """Fagin's Threshold Algorithm (the middleware top-k join: optimal
-    for aggregating ranked lists without scanning them) over two real
-    rankings — per-user click-value cents and purchase-value cents:
-    sorted access walks both lists in parallel, every seen user is
-    random-accessed for its other score, and the walk STOPS the first
-    depth d where the 5th-best complete score reaches the threshold
-    T(d) = L1[d] + L2[d] — at which point the theorem guarantees the
-    top-5 is exact, pinned here against an independent full-sort brute
-    force (ta_exact_ok) with the early-stop depth emitted beside the
-    corpus size (the instance-optimality TA exists for). The per-depth
-    state (threshold, kth-best-so-far) is computed SET-AT-A-TIME — a
-    steps x users join with one rank window per depth, no sequential
-    walk — exactly how a distributed engine would evaluate TA's stop
-    condition over partitioned rankings. Depth capped at 200 with an
-    honest full-scan fallback (stop_step = n) that keeps the pin
-    meaningful either way."""
-    e = _t(spark, sf_dir, "events")
-    cents = F.floor(F.col("value") * 100 + 0.5).cast("long")
-    sc = (e.groupBy("user_id")
-          .agg(F.sum(F.when(F.col("event_type") == "click", cents)
-                     .otherwise(0)).alias("s1"),
-               F.sum(F.when(F.col("event_type") == "purchase", cents)
-                     .otherwise(0)).alias("s2")))
-    rk = (sc.withColumn("total", F.col("s1") + F.col("s2"))
-          .withColumn("r1", F.row_number().over(
-              Window.orderBy(F.desc("s1"), "user_id")))
-          .withColumn("r2", F.row_number().over(
-              Window.orderBy(F.desc("s2"), "user_id")))).persist()
-    n = rk.count()
-    dmax = min(n, 200)
-    steps = spark.range(1, dmax + 1).select(F.col("id").alias("d"))
-    th = (steps.join(rk.select(F.col("r1").alias("d"),
-                               F.col("user_id").alias("u1"),
-                               F.col("s1").alias("v1")), "d")
-          .join(rk.select(F.col("r2").alias("d"),
-                          F.col("user_id").alias("u2"),
-                          F.col("s2").alias("v2")), "d")
-          .withColumn("threshold", F.col("v1") + F.col("v2")))
-    seen = (steps.join(rk, F.least("r1", "r2") <= F.col("d"))
-            .select("d", "user_id", "total")
-            .withColumn("rn", F.row_number().over(
-                Window.partitionBy("d")
-                .orderBy(F.desc("total"), "user_id"))))
-    kb = seen.groupBy("d").agg(
-        F.max(F.when(F.col("rn") == 5, F.col("total"))).alias("kth"))
-    st = (th.join(kb, "d")
-          .withColumn("stopped", F.col("kth").isNotNull()
-                      & (F.col("kth") >= F.col("threshold"))))
-    stop_d = (st.agg(F.coalesce(
-        F.min(F.when(F.col("stopped"), F.col("d"))),
-        F.lit(dmax)).alias("s")).collect()[0]["s"])
-    item = F.concat(F.col("user_id").cast("string"), F.lit(":"),
-                    F.col("total").cast("string"))
-    ta5 = (seen.filter((F.col("d") == stop_d) & (F.col("rn") <= 5))
-           .orderBy("rn").agg(F.concat_ws(",", F.collect_list(item))
-                              .alias("t")).collect()[0]["t"])
-    b5 = (rk.withColumn("rn", F.row_number().over(
-        Window.orderBy(F.desc("total"), "user_id")))
-        .filter(F.col("rn") <= 5).orderBy("rn")
-        .agg(F.concat_ws(",", F.collect_list(item)).alias("t"))
-        .collect()[0]["t"])
-    return (st.filter(F.col("d") <= stop_d)
-            .select(F.col("d").cast("int").alias("d"), "u1",
-                    F.col("v1").cast("long").alias("v1"), "u2",
-                    F.col("v2").cast("long").alias("v2"),
-                    F.col("threshold").cast("long").alias("threshold"),
-                    F.col("kth").cast("long").alias("kth_best"),
-                    "stopped",
-                    F.lit(int(stop_d)).cast("int").alias("stop_step"),
-                    F.lit(n).cast("long").alias("n_users"),
-                    F.lit(ta5).alias("ta_top5"),
-                    F.lit(b5).alias("brute_top5"),
-                    F.lit(ta5 == b5).alias("ta_exact_ok"),
-                    F.lit(bool(stop_d < n)).alias("early_stop")))
-
-
-_FM_PATTERNS = ["the", "ing", "data", "qu"]
-
-
-def _fm_sql() -> str:
-    # per-pattern backward-search chains as generated LATERALs; the
-    # pattern characters are compile-time constants, all interval
-    # arithmetic runs on the data-derived C/occ tables
-    pats = []
-    for p in _FM_PATTERNS:
-        chain = []
-        last = p[-1]
-        chain.append(
-            f"LATERAL (SELECT coalesce((SELECT c FROM ctab"
-            f" WHERE ch = '{last}'), 0) + 1 AS sp,"
-            f" coalesce((SELECT c FROM ctab WHERE ch = '{last}'), 0)"
-            f" + coalesce((SELECT cnt FROM freq WHERE ch = '{last}'),"
-            f" 0) AS ep) st1")
-        for k, c in enumerate(reversed(p[:-1]), start=2):
-            prev = f"st{k - 1}"
-            chain.append(
-                f"LATERAL (SELECT CASE WHEN {prev}.sp > {prev}.ep"
-                f" THEN {prev}.sp ELSE"
-                f" coalesce((SELECT c FROM ctab WHERE ch = '{c}'), 0)"
-                f" + (SELECT count(*) FROM ranked WHERE ch = '{c}'"
-                f" AND rank <= {prev}.sp - 1) + 1 END AS sp,"
-                f" CASE WHEN {prev}.sp > {prev}.ep THEN {prev}.ep ELSE"
-                f" coalesce((SELECT c FROM ctab WHERE ch = '{c}'), 0)"
-                f" + (SELECT count(*) FROM ranked WHERE ch = '{c}'"
-                f" AND rank <= {prev}.ep) END AS ep) st{k}")
-        steps_rows = []
-        for k in range(1, len(p) + 1):
-            c = p[len(p) - k]
-            steps_rows.append(
-                f"SELECT '{p}' AS pattern, {k} AS step, '{c}' AS ch,"
-                f" CAST(st{k}.sp AS BIGINT) AS sp,"
-                f" CAST(st{k}.ep AS BIGINT) AS ep,"
-                f" CAST(greatest(st{k}.ep - st{k}.sp + 1, 0) AS BIGINT)"
-                f" AS width,"
-                f" CAST(greatest(st{len(p)}.ep - st{len(p)}.sp + 1, 0)"
-                f" AS BIGINT) AS fm_count,"
-                f" CAST((length((SELECT s FROM d))"
-                f" - length(replace((SELECT s FROM d), '{p}', '')))"
-                f" // {len(p)} AS BIGINT) AS direct_count"
-                f" FROM {' , '.join(['(SELECT 1) one'] + chain)}")
-        pats.append(" UNION ALL ".join(steps_rows))
-    body = " UNION ALL ".join(pats)
-    return f"""
-WITH d AS (
-  SELECT regexp_replace(lower(substr(text, 1, 200)), '[^a-z ]', '', 'g')
-         || '!' AS s
-  FROM documents ORDER BY doc_id LIMIT 1
-), idx AS (
-  SELECT unnest(range(1, length((SELECT s FROM d)) + 1)) AS i
-), rot AS (
-  SELECT CAST(i AS INTEGER) AS start_idx,
-         substr(d.s, CAST(i AS INTEGER))
-           || substr(d.s, 1, CAST(i AS INTEGER) - 1) AS r,
-         d.s AS s
-  FROM idx, d
-), ranked AS (
-  SELECT CAST(row_number() OVER (ORDER BY r) AS INTEGER) AS rank,
-         substr(r, length(s), 1) AS ch
-  FROM rot
-), freq AS (
-  SELECT ch, count(*) AS cnt FROM ranked GROUP BY ch
-), ctab AS (
-  SELECT f.ch, coalesce(sum(g.cnt), 0) AS c
-  FROM freq f LEFT JOIN freq g ON g.ch < f.ch
-  GROUP BY f.ch
-), res AS ({body})
-SELECT pattern, CAST(step AS INTEGER) AS step, ch, sp, ep, width,
-       fm_count, direct_count, fm_count = direct_count AS fm_exact_ok
-FROM res
-"""
-
-
-@register("text_fm_index_search", _fm_sql())
-def text_fm_index_search(spark, sf_dir):
-    """FM-index backward search (Ferragina-Manzini — the compressed
-    substring index inside bwa/bowtie) over the same 200-char
-    normalized document prefix as text_bwt_runs: BWT from sorted
-    rotations, C table from the character histogram, and each pattern
-    matched RIGHT to LEFT by the classic interval recurrence sp' =
-    C[c] + Occ(c, sp−1) + 1, ep' = C[c] + Occ(c, ep) — every step of
-    every interval emitted (sp, ep, width per consumed character), and
-    the final interval width pinned equal to a direct substring count
-    computed by length arithmetic in both engines (the four probe
-    patterns are chosen border-free so overlapping and non-overlapping
-    counts coincide and the replace-based direct count is exact).
-    Empty intervals propagate honestly (width 0 stays 0). The trio
-    text_bwt_runs / text_bwt_inverse / this row now covers build,
-    invert and SEARCH on the same transform. Engine: bounded driver
-    replay over the same rotations; oracle: generated per-pattern
-    LATERAL chains with correlated Occ subqueries against the ranked
-    rotation table."""
-    import re as _re
-    txt = (_t(spark, sf_dir, "documents").orderBy("doc_id")
-           .limit(1).collect()[0]["text"])
-    s = _re.sub(r"[^a-z ]", "", txt[:200].lower()) + "!"
-    n = len(s)
-    rots = sorted(s[i:] + s[:i] for i in range(n))
-    bwt = [r[-1] for r in rots]
-    freq: dict = {}
-    for c in s:
-        freq[c] = freq.get(c, 0) + 1
-    ctab = {c: sum(v for k, v in freq.items() if k < c) for c in freq}
-
-    def occ(c, i):
-        return sum(1 for x in bwt[:i] if x == c)
-
-    rows = []
-    for p in _FM_PATTERNS:
-        direct = (len(s) - len(s.replace(p, ""))) // len(p)
-        c = p[-1]
-        sp = ctab.get(c, 0) + 1
-        ep = ctab.get(c, 0) + freq.get(c, 0)
-        steps = [(1, c, sp, ep)]
-        for k, c in enumerate(reversed(p[:-1]), start=2):
-            if sp > ep:
-                steps.append((k, c, sp, ep))
-                continue
-            sp2 = ctab.get(c, 0) + occ(c, sp - 1) + 1
-            ep2 = ctab.get(c, 0) + occ(c, ep)
-            sp, ep = sp2, ep2
-            steps.append((k, c, sp, ep))
-        fm = max(ep - sp + 1, 0)
-        for k, c, a, b in steps:
-            rows.append((p, k, c, a, b, max(b - a + 1, 0), fm, direct,
-                         fm == direct))
-    return spark.createDataFrame(
-        rows, "pattern string, step int, ch string, sp long, ep long,"
-              " width long, fm_count long, direct_count long,"
-              " fm_exact_ok boolean")
-
-
-_WAVELET_SQL = """
-WITH words AS (
-  SELECT doc_id, wp, word
-  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word,
-               generate_subscripts(string_split(text, ' '), 1) AS wp
-        FROM documents)
-  WHERE word <> ''
-), seq0 AS (
-  SELECT word, row_number() OVER (ORDER BY doc_id, wp) AS pos
-  FROM words
-), seq AS (
-  SELECT word, pos FROM seq0 WHERE pos <= 512
-), vocab AS (
-  SELECT word, row_number() OVER (ORDER BY word) - 1 AS wid
-  FROM (SELECT DISTINCT word FROM seq)
-), s AS (
-  SELECT q.pos, q.word, v.wid
-  FROM seq q JOIN vocab v ON v.word = q.word
-), nn AS (
-  SELECT count(*) AS n FROM s
-), lv AS (
-  SELECT l.l, s.pos, s.wid,
-         s.wid // CAST(power(2, 5 - l.l) AS BIGINT) AS node,
-         (s.wid // CAST(power(2, 4 - l.l) AS BIGINT)) % 2 AS bit,
-         row_number() OVER (PARTITION BY l.l,
-             s.wid // CAST(power(2, 5 - l.l) AS BIGINT)
-             ORDER BY s.pos) AS npos
-  FROM s, (SELECT unnest(range(0, 5)) AS l) l
-), freq AS (
-  SELECT s.wid, s.word, count(*) AS cnt
-  FROM s GROUP BY s.wid, s.word
-), pw AS (
-  SELECT word, wid, rf FROM (
-    SELECT word, wid, row_number() OVER (ORDER BY cnt DESC, word)
-      AS rf
-    FROM freq)
-  WHERE rf IN (1, 3, 7, 15)
-), probes AS (
-  SELECT p.word, p.wid, i.i
-  FROM pw p, LATERAL (
-    SELECT (SELECT n FROM nn) // 4 AS i
-    UNION ALL SELECT (SELECT n FROM nn) // 2) i
-), de AS (
-  SELECT pr.word, pr.wid, pr.i,
-         d0.c AS i1, d1.c AS i2, d2.c AS i3, d3.c AS i4, d4.c AS i5
-  FROM probes pr
-  CROSS JOIN LATERAL (
-    SELECT (SELECT count(*) FROM lv WHERE lv.l = 0
-            AND lv.node = pr.wid // 32
-            AND lv.npos <= pr.i
-            AND lv.bit = (pr.wid // 16) % 2) AS c) d0
-  CROSS JOIN LATERAL (
-    SELECT (SELECT count(*) FROM lv WHERE lv.l = 1
-            AND lv.node = pr.wid // 16
-            AND lv.npos <= d0.c
-            AND lv.bit = (pr.wid // 8) % 2) AS c) d1
-  CROSS JOIN LATERAL (
-    SELECT (SELECT count(*) FROM lv WHERE lv.l = 2
-            AND lv.node = pr.wid // 8
-            AND lv.npos <= d1.c
-            AND lv.bit = (pr.wid // 4) % 2) AS c) d2
-  CROSS JOIN LATERAL (
-    SELECT (SELECT count(*) FROM lv WHERE lv.l = 3
-            AND lv.node = pr.wid // 4
-            AND lv.npos <= d2.c
-            AND lv.bit = (pr.wid // 2) % 2) AS c) d3
-  CROSS JOIN LATERAL (
-    SELECT (SELECT count(*) FROM lv WHERE lv.l = 4
-            AND lv.node = pr.wid // 2
-            AND lv.npos <= d3.c
-            AND lv.bit = pr.wid % 2) AS c) d4
-)
-SELECT d.word, CAST(d.wid AS INTEGER) AS wid, CAST(d.i AS BIGINT) AS i,
-       CAST(d.i1 AS BIGINT) AS l1_rank, CAST(d.i2 AS BIGINT) AS l2_rank,
-       CAST(d.i3 AS BIGINT) AS l3_rank, CAST(d.i4 AS BIGINT) AS l4_rank,
-       CAST(d.i5 AS BIGINT) AS wavelet_rank,
-       CAST((SELECT count(*) FROM s
-             WHERE s.word = d.word AND s.pos <= d.i) AS BIGINT)
-         AS direct_rank,
-       d.i5 = (SELECT count(*) FROM s
-               WHERE s.word = d.word AND s.pos <= d.i) AS rank_ok,
-       CAST((SELECT n FROM nn) AS BIGINT) AS n,
-       CAST((SELECT count(*) FROM vocab) AS INTEGER) AS vocab_size
-FROM de d
-"""
-
-
-@register("text_wavelet_tree_rank", _WAVELET_SQL)
-def text_wavelet_tree_rank(spark, sf_dir):
-    """Wavelet tree rank queries (Grossi-Gupta-Vitter — the succinct
-    sequence index behind FM-index Occ tables and compressed column
-    stores) over the corpus's first 512 words mapped to 5-bit
-    alphabetical ids: the tree needs NO iterative construction because
-    stable bit-partitioning preserves original order inside every node,
-    so each depth's (node, position, bit) table is a closed form — one
-    row_number window per depth over the id's high bits. rank(word, i)
-    then descends the five levels with the classic recurrence iₗ₊₁ =
-    rank_bit(node, iₗ), every intermediate interval position emitted,
-    and the result pinned against a direct windowed count on the raw
-    sequence — for eight probes spanning frequent and rare words at two
-    depths. The level tables are the distributed part (pure windows by
-    (depth, node), the per-partition shape of a column-store index
-    build); each probe's descent is five O(1) lookups. Completes the
-    succinct-structure family beside Elias-Fano and the BWT trio.
-    Engine: bounded driver replay over the same 512-word sequence;
-    oracle: correlated-count descent through chained LATERALs."""
-    rows = (_t(spark, sf_dir, "documents")
-            .select("doc_id", F.posexplode(F.split("text", " "))
-                    .alias("wp", "word"))
-            .filter(F.col("word") != "")
-            .select("doc_id", "wp", "word")
-            .orderBy("doc_id", "wp").limit(512).collect())
-    seqw = [r["word"] for r in rows]
-    n = len(seqw)
-    vocab = {w: i for i, w in enumerate(sorted(set(seqw)))}
-    from collections import Counter
-    cnt = Counter(seqw)
-    ranked = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))
-    picks = [ranked[j][0] for j in (0, 2, 6, 14) if j < len(ranked)]
-    out = []
-    for w in picks:
-        wid = vocab[w]
-        for i in (n // 4, n // 2):
-            ip = i
-            inter = []
-            for l in range(5):
-                node = wid >> (5 - l)
-                bit = (wid >> (4 - l)) & 1
-                node_elems = [x for x in seqw
-                              if vocab[x] >> (5 - l) == node]
-                ip = sum(1 for x in node_elems[:ip]
-                         if (vocab[x] >> (4 - l)) & 1 == bit)
-                inter.append(ip)
-            direct = sum(1 for x in seqw[:i] if x == w)
-            out.append((w, wid, i, inter[0], inter[1], inter[2],
-                        inter[3], inter[4], direct,
-                        inter[4] == direct, n, len(vocab)))
-    return spark.createDataFrame(
-        out, "word string, wid int, i long, l1_rank long, l2_rank long,"
-             " l3_rank long, l4_rank long, wavelet_rank long,"
-             " direct_rank long, rank_ok boolean, n long,"
-             " vocab_size int")
-
-
-_LEARNED_IDX_SQL = """
-WITH ks AS (
-  SELECT doc_id,
-         CAST(concat('0x', substr(md5('li:' || CAST(doc_id AS VARCHAR)),
-                                  1, 12)) AS BIGINT) AS key
-  FROM documents
-), rk AS (
-  SELECT doc_id, key,
-         row_number() OVER (ORDER BY key, doc_id) - 1 AS pos
-  FROM ks
-), seg AS (
-  SELECT rk.*, key // 35184372088832 AS sg   -- top 3 bits of 48
-  FROM rk
-), sb AS (
-  SELECT sg, min(pos) AS base, count(*) AS n_seg,
-         min(key) AS lo, max(key) AS hi
-  FROM seg GROUP BY sg
-), pred AS (
-  SELECT s.sg, s.doc_id, s.key, s.pos, b.base, b.n_seg, b.lo, b.hi,
-         b.base + CASE WHEN b.hi = b.lo THEN 0
-           ELSE (s.key - b.lo) * (b.n_seg - 1) // (b.hi - b.lo) END
-           AS ppos
-  FROM seg s JOIN sb b ON b.sg = s.sg
-), err AS (
-  SELECT sg, max(abs(pos - ppos)) AS maxerr,
-         sum(abs(pos - ppos)) AS toterr, count(*) AS n_seg
-  FROM pred GROUP BY sg
-), chk AS (
-  SELECT p.sg,
-         bool_and(p.pos BETWEEN p.ppos - e.maxerr
-                  AND p.ppos + e.maxerr) AS all_covered
-  FROM pred p JOIN err e ON e.sg = p.sg
-  GROUP BY p.sg
-), tot AS (
-  SELECT count(*) AS n, max(pos) AS maxpos FROM rk
-)
-SELECT CAST(e.sg AS INTEGER) AS segment,
-       CAST(e.n_seg AS BIGINT) AS n_keys,
-       CAST(b.lo AS BIGINT) AS key_lo, CAST(b.hi AS BIGINT) AS key_hi,
-       CAST(b.base AS BIGINT) AS pos_base,
-       CAST(e.maxerr AS BIGINT) AS max_err,
-       CAST(e.toterr * 1000000 // e.n_seg AS BIGINT) AS mean_err_e6,
-       c.all_covered,
-       CAST(length(bin(GREATEST(2 * e.maxerr + 1, 1))) AS INTEGER)
-         AS search_bits,
-       CAST(length(bin(GREATEST((SELECT n FROM tot), 1))) AS INTEGER)
-         AS full_bits,
-       length(bin(GREATEST(2 * e.maxerr + 1, 1)))
-         <= length(bin(GREATEST((SELECT n FROM tot), 1)))
-         AS never_worse,
-       CAST((SELECT n FROM tot) AS BIGINT) AS n_total
-FROM err e JOIN sb b ON b.sg = e.sg JOIN chk c ON c.sg = e.sg
-"""
-
-
-@register("q_docs_learned_index", _LEARNED_IDX_SQL)
-def q_docs_learned_index(spark, sf_dir):
-    """Learned index in the RadixSpline/PLEX style (the CDF-model
-    alternative to B+-trees): 48-bit md5-spread keys per document,
-    partitioned into 8 radix segments by their top 3 bits, each segment
-    modeled by the exact integer CDF line pos ≈ base + (key−lo)·(n−1)
-    div (hi−lo) — no floats anywhere — with the per-segment MAXIMUM
-    prediction error measured against true ranks and the lookup
-    contract pinned: every key's true position lies within
-    [pred−maxerr, pred+maxerr] (all_covered), so a lookup binary-
-    searches log2(2·maxerr+1) positions instead of log2(n) — both bit
-    counts emitted with never_worse pinned, the exact win a learned
-    index is built for (near-uniform keys give single-digit errors
-    where the B+-tree row pays its full height). Ranks, segment stats
-    and error maxima are one window plus two aggregates — fully
-    distributed, the same shape at 10⁹ keys. The B+-tree bulk-load row
-    over the same table is the classical baseline this replaces."""
-    ks = (_t(spark, sf_dir, "documents")
-          .select("doc_id", F.conv(F.substring(F.md5(F.concat(
-              F.lit("li:"), F.col("doc_id").cast("string"))), 1, 12),
-              16, 10).cast("long").alias("key")))
-    rk = ks.withColumn("pos", F.row_number().over(
-        Window.orderBy("key", "doc_id")) - 1)
-    seg = rk.withColumn("sg", F.expr("key div 35184372088832"))
-    sb = seg.groupBy("sg").agg(F.min("pos").alias("base"),
-                               F.count(F.lit(1)).alias("n_seg"),
-                               F.min("key").alias("lo"),
-                               F.max("key").alias("hi"))
-    pred = (seg.join(sb, "sg")
-            .withColumn("ppos", F.col("base") + F.when(
-                F.col("hi") == F.col("lo"), 0).otherwise(
-                F.expr("(key - lo) * (n_seg - 1) div (hi - lo)"))))
-    err = pred.groupBy("sg").agg(
-        F.max(F.abs(F.col("pos") - F.col("ppos"))).alias("maxerr"),
-        F.sum(F.abs(F.col("pos") - F.col("ppos"))).alias("toterr"),
-        F.count(F.lit(1)).alias("n_seg2"))
-    chk = (pred.join(err, "sg")
-           .groupBy("sg")
-           .agg(F.min((F.col("pos") >= F.col("ppos") - F.col("maxerr"))
-                      & (F.col("pos") <= F.col("ppos")
-                         + F.col("maxerr"))).alias("all_covered")))
-    tot = rk.agg(F.count(F.lit(1)).alias("n"))
-    bits = lambda c: F.length(F.bin(F.greatest(c, F.lit(1))))  # noqa: E731
-    return (err.join(sb, "sg").join(chk, "sg")
-            .crossJoin(F.broadcast(tot))
-            .select(F.col("sg").cast("int").alias("segment"),
-                    F.col("n_seg2").cast("long").alias("n_keys"),
-                    F.col("lo").cast("long").alias("key_lo"),
-                    F.col("hi").cast("long").alias("key_hi"),
-                    F.col("base").cast("long").alias("pos_base"),
-                    F.col("maxerr").cast("long").alias("max_err"),
-                    F.expr("toterr * 1000000 div n_seg2").cast("long")
-                    .alias("mean_err_e6"),
-                    "all_covered",
-                    bits(2 * F.col("maxerr") + 1).cast("int")
-                    .alias("search_bits"),
-                    bits(F.col("n")).cast("int").alias("full_bits"),
-                    (bits(2 * F.col("maxerr") + 1) <= bits(F.col("n")))
-                    .alias("never_worse"),
-                    F.col("n").cast("long").alias("n_total")))
-
-
-_APRIORI_SQL = """
-WITH um AS (
-  SELECT user_id,
-         max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-         + max(CASE WHEN event_type = 'error' THEN 2 ELSE 0 END)
-         + max(CASE WHEN event_type = 'purchase' THEN 4 ELSE 0 END)
-         + max(CASE WHEN event_type = 'signup' THEN 8 ELSE 0 END)
-         + max(CASE WHEN event_type = 'view' THEN 16 ELSE 0 END)
-           AS mask
-  FROM events GROUP BY user_id
-), nn AS (
-  SELECT count(*) AS n FROM um
-), its AS (
-  SELECT CAST(s AS BIGINT) AS iset
-  FROM (SELECT unnest(range(1, 32)) AS s)
-), sup AS (
-  SELECT i.iset,
-         (SELECT count(*) FROM um
-          WHERE (um.mask & i.iset) = i.iset) AS support
-  FROM its i
-), base AS (
-  SELECT s.iset, s.support,
-         bit_count(CAST(s.iset AS BIGINT)) AS k,
-         s.support * 10 >= (SELECT n FROM nn) AS frequent
-  FROM sup s
-), am AS (
-  SELECT b.iset,
-         bool_and(p.support >= b.support) AS antimonotone_ok
-  FROM base b
-  JOIN base p ON b.k > 1 AND p.k = b.k - 1
-             AND (b.iset & p.iset) = p.iset
-  GROUP BY b.iset
-), maxi AS (
-  SELECT b.iset,
-         b.frequent AND NOT EXISTS (
-           SELECT 1 FROM base sup2
-           WHERE sup2.k = b.k + 1 AND (sup2.iset & b.iset) = b.iset
-             AND sup2.frequent) AS is_maximal
-  FROM base b
-)
-SELECT CAST(b.iset AS INTEGER) AS iset,
-       concat(CASE WHEN b.iset & 1 > 0 THEN 'C' ELSE '' END,
-              CASE WHEN b.iset & 2 > 0 THEN 'E' ELSE '' END,
-              CASE WHEN b.iset & 4 > 0 THEN 'P' ELSE '' END,
-              CASE WHEN b.iset & 8 > 0 THEN 'S' ELSE '' END,
-              CASE WHEN b.iset & 16 > 0 THEN 'V' ELSE '' END)
-         AS items,
-       CAST(b.k AS INTEGER) AS k, CAST(b.support AS BIGINT) AS support,
-       b.frequent, coalesce(a.antimonotone_ok, TRUE) AS antimonotone_ok,
-       m.is_maximal,
-       CAST((SELECT n FROM nn) AS BIGINT) AS n_users
-FROM base b
-LEFT JOIN am a ON a.iset = b.iset
-JOIN maxi m ON m.iset = b.iset
-"""
-
-
-@register("q_events_apriori_itemsets", _APRIORI_SQL)
-def q_events_apriori_itemsets(spark, sf_dir):
-    """Apriori frequent itemsets over each user's SET of event types,
-    evaluated exactly by bitmask algebra — a user's behavior profile is
-    one 5-bit mask, itemset support is a superset test (mask & S = S),
-    and all 31 candidate itemsets are scored in one pass against the
-    per-user mask table. The property the Apriori algorithm EXISTS for
-    is pinned on every itemset: antimonotonicity — support(S) never
-    exceeds the support of any (k−1)-subset, verified by a real
-    subset join — plus the maximal-frequent frontier (frequent with no
-    frequent superset, the condensed output a miner would report) at a
-    10% support threshold. The per-user mask aggregate is the only
-    data-sized stage (map-side combinable); the 31-itemset lattice is
-    planner-scale. No replay, no recursion, either engine."""
-    e = _t(spark, sf_dir, "events")
-    bit = {"click": 1, "error": 2, "purchase": 4, "signup": 8,
-           "view": 16}
-    aggs = [F.max(F.when(F.col("event_type") == t, b).otherwise(0))
-            .alias(f"b{b}") for t, b in bit.items()]
-    um = (e.groupBy("user_id").agg(*aggs)
-          .select((sum(F.col(f"b{b}") for b in bit.values()))
-                  .alias("mask")))
-    n = um.count()
-    its = spark.range(1, 32).select(F.col("id").alias("iset"))
-    sup = (its.crossJoin(um)
-           .groupBy("iset")
-           .agg(F.sum(F.when(
-               F.expr("(mask & iset) = iset"), 1).otherwise(0))
-               .alias("support")))
-    base = (sup.withColumn("k", F.bit_count("iset").cast("int"))
-            .withColumn("frequent", F.col("support") * 10 >= F.lit(n))
-            ).persist()
-    b2 = base.select(F.col("iset").alias("piset"),
-                     F.col("support").alias("psupport"),
-                     F.col("k").alias("pk"),
-                     F.col("frequent").alias("pfrequent"))
-    anti = (base.join(b2, F.expr(
-        "k > 1 AND pk = k - 1 AND (iset & piset) = piset"))
-        .groupBy("iset")
-        .agg(F.min(F.col("psupport") >= F.col("support"))
-             .alias("antimonotone_ok")))
-    maxi = (base.join(b2, F.expr(
-        "pk = k + 1 AND (piset & iset) = iset AND pfrequent"), "left")
-        .groupBy("iset")
-        .agg((F.first("frequent")
-              & (F.count(F.col("piset")) == 0)).alias("is_maximal")))
-    items = F.concat(
-        F.when(F.expr("iset & 1 > 0"), "C").otherwise(""),
-        F.when(F.expr("iset & 2 > 0"), "E").otherwise(""),
-        F.when(F.expr("iset & 4 > 0"), "P").otherwise(""),
-        F.when(F.expr("iset & 8 > 0"), "S").otherwise(""),
-        F.when(F.expr("iset & 16 > 0"), "V").otherwise(""))
-    return (base.join(anti, "iset", "left").join(maxi, "iset")
-            .select(F.col("iset").cast("int").alias("iset"),
-                    items.alias("items"),
-                    F.col("k").cast("int").alias("k"),
-                    F.col("support").cast("long").alias("support"),
-                    "frequent",
-                    F.coalesce("antimonotone_ok", F.lit(True))
-                    .alias("antimonotone_ok"),
-                    "is_maximal",
-                    F.lit(n).cast("long").alias("n_users")))
-
-
-_GOLOMB_SQL = """
-WITH pid AS (
-  SELECT event_id AS x,
-         row_number() OVER (ORDER BY event_id) AS rn
-  FROM events WHERE event_type = 'purchase'
-), gaps AS (
-  SELECT p.rn, p.x,
-         p.x - coalesce(lag(p.x) OVER (ORDER BY p.x), -1) AS g
-  FROM pid p
-), stats AS (
-  SELECT count(*) AS n, sum(g) AS totg, max(g) AS maxg FROM gaps
-), scan AS (
-  SELECT b.b,
-         (SELECT sum(((g.g - 1) // (CAST(1 AS BIGINT) << b.b)) + 1
-                     + b.b) FROM gaps g) AS bits
-  FROM (SELECT unnest(range(0, 17)) AS b) b
-), best AS (
-  SELECT b AS bstar, bits AS best_bits
-  FROM scan ORDER BY bits, b LIMIT 1
-), heur AS (
-  SELECT greatest(length(bin(GREATEST(
-           (SELECT totg FROM stats) * 693
-           // ((SELECT n FROM stats) * 1000), 1))) - 1, 0) AS bh
-), hbits AS (
-  SELECT (SELECT sum(((g.g - 1) // (CAST(1 AS BIGINT)
-             << (SELECT bh FROM heur))) + 1 + (SELECT bh FROM heur))
-          FROM gaps g) AS heur_bits
-), plain AS (
-  SELECT (SELECT n FROM stats)
-         * length(bin(GREATEST((SELECT maxg FROM stats), 1)))
-           AS plain_bits
-)
-SELECT CAST(s.b AS INTEGER) AS b, CAST(s.bits AS BIGINT) AS total_bits,
-       CAST((SELECT bstar FROM best) AS INTEGER) AS b_star,
-       CAST((SELECT best_bits FROM best) AS BIGINT) AS best_bits,
-       s.bits >= (SELECT best_bits FROM best) AS bstar_optimal_ok,
-       CAST((SELECT bh FROM heur) AS INTEGER) AS b_heuristic,
-       CAST((SELECT heur_bits FROM hbits) AS BIGINT) AS heuristic_bits,
-       (SELECT best_bits FROM best) <= (SELECT heur_bits FROM hbits)
-         AS best_le_heuristic,
-       CAST((SELECT plain_bits FROM plain) AS BIGINT) AS plain_bits,
-       (SELECT best_bits FROM best) < (SELECT plain_bits FROM plain)
-         AS beats_plain,
-       CAST((SELECT n FROM stats) AS BIGINT) AS n_gaps
-FROM scan s
-"""
-
-
-@register("search_golomb_gaps", _GOLOMB_SQL)
-def search_golomb_gaps(spark, sf_dir):
-    """Golomb-Rice coding of the purchase posting list's gaps — the
-    inverted-index gap compression that preceded Elias-Fano (and still
-    backs Lucene doc deltas): for every Rice parameter b in 0..16 the
-    exact encoded size Σ((g−1)>>b + 1 + b) is computed in ONE
-    conditional-aggregate scan (no per-b passes over data — the scan
-    is a 17-row broadcast against the gap table), the optimal b* is
-    the argmin with every row pinned ≥ best (bstar_optimal_ok), the
-    classic heuristic b ≈ log2(0.69·mean_gap) — integer bit-length
-    math, no logs — rides beside it pinned never better than the
-    exhaustive optimum, and the whole code is pinned smaller than
-    fixed-width max-gap encoding. Gaps come from one lag window over
-    the filtered postings; everything else is aggregate arithmetic —
-    the per-term shape of an index compressor at any scale."""
-    e = _t(spark, sf_dir, "events")
-    pid = (e.filter(F.col("event_type") == "purchase")
-           .select(F.col("event_id").alias("x")))
-    gaps = pid.select(
-        (F.col("x") - F.coalesce(
-            F.lag("x").over(Window.orderBy("x")), F.lit(-1)))
-        .alias("g")).persist()
-    st = gaps.agg(F.count(F.lit(1)).alias("n"),
-                  F.sum("g").alias("totg"),
-                  F.max("g").alias("maxg")).collect()[0]
-    n, totg, maxg = int(st["n"]), int(st["totg"]), int(st["maxg"])
-    bs = spark.range(0, 17).select(F.col("id").cast("int").alias("b"))
-    scan = (bs.crossJoin(gaps)
-            .groupBy("b")
-            .agg(F.sum(F.expr(
-                "((g - 1) div shiftleft(CAST(1 AS BIGINT), b)) + 1 + b"))
-                .alias("bits")))
-    rows = {int(r["b"]): int(r["bits"]) for r in scan.collect()}
-    bstar = min(rows, key=lambda b: (rows[b], b))
-    bh = max((totg * 693 // (n * 1000)).bit_length() - 1, 0)
-    heur_bits = rows[bh]
-    plain_bits = n * max(maxg.bit_length(), 1)
-    out = [(b, bits, bstar, rows[bstar], bits >= rows[bstar], bh,
-            heur_bits, rows[bstar] <= heur_bits, plain_bits,
-            rows[bstar] < plain_bits, n)
-           for b, bits in sorted(rows.items())]
-    return spark.createDataFrame(
-        out, "b int, total_bits long, b_star int, best_bits long,"
-             " bstar_optimal_ok boolean, b_heuristic int,"
-             " heuristic_bits long, best_le_heuristic boolean,"
-             " plain_bits long, beats_plain boolean, n_gaps long")
-
-
-_TREAP_SQL = """
-WITH ks AS (
-  SELECT doc_id AS key,
-         CAST(concat('0x', substr(md5('tp:' || CAST(doc_id AS VARCHAR)),
-                                  1, 15)) AS BIGINT) AS prio
-  FROM documents WHERE doc_id < 512
-), nsl AS (
-  SELECT a.key, a.prio,
-         max(b.key) AS lkey
-  FROM ks a LEFT JOIN ks b ON b.key < a.key AND b.prio < a.prio
-  GROUP BY a.key, a.prio
-), nsr AS (
-  SELECT a.key, min(b.key) AS rkey
-  FROM ks a LEFT JOIN ks b ON b.key > a.key AND b.prio < a.prio
-  GROUP BY a.key
-), par AS (
-  SELECT l.key, l.prio, l.lkey, r.rkey,
-         CASE
-           WHEN l.lkey IS NULL AND r.rkey IS NULL THEN NULL
-           WHEN l.lkey IS NULL THEN r.rkey
-           WHEN r.rkey IS NULL THEN l.lkey
-           WHEN (SELECT prio FROM ks WHERE key = l.lkey)
-                > (SELECT prio FROM ks WHERE key = r.rkey)
-             THEN l.lkey
-           ELSE r.rkey END AS parent_key
-  FROM nsl l JOIN nsr r ON r.key = l.key
-), sided AS (
-  SELECT p.key, p.prio, p.parent_key,
-         CASE WHEN p.parent_key IS NULL THEN 'root'
-              WHEN p.key < p.parent_key THEN 'L' ELSE 'R' END AS side,
-         (SELECT prio FROM ks WHERE key = p.parent_key) AS pprio
-  FROM par p
-)
-SELECT s.key, s.prio, coalesce(s.parent_key, -1) AS parent_key, s.side,
-       s.parent_key IS NULL OR s.pprio < s.prio AS heap_ok,
-       s.parent_key IS NULL
-         OR (s.side = 'L' AND s.key < s.parent_key)
-         OR (s.side = 'R' AND s.key > s.parent_key) AS bst_ok,
-       CAST(count(*) OVER (PARTITION BY s.parent_key, s.side)
-            AS INTEGER) AS siblings,
-       s.parent_key IS NULL
-         OR count(*) OVER (PARTITION BY s.parent_key, s.side) = 1
-         AS unique_child_ok,
-       CAST(sum(CASE WHEN s.parent_key IS NULL THEN 1 ELSE 0 END)
-            OVER () AS INTEGER) AS n_roots
-FROM sided s
-"""
-
-
-@register("q_docs_treap_shape", _TREAP_SQL)
-def q_docs_treap_shape(spark, sf_dir):
-    """Treap / Cartesian tree over the document keys with md5
-    priorities — the randomized-BST canonical-form theorem made
-    machine-checkable: the ENGINE builds the treap by literal BST
-    insertion with rotations (bubble a node up while its priority
-    beats its parent's), the ORACLE builds it with zero insertions via
-    the Cartesian-tree closed form (a node's parent is whichever of
-    its two nearest-smaller-priority neighbors — by key, found with
-    two order joins — has the LARGER priority), and the correctness
-    gate's value-hash equality proves the two constructions coincide,
-    i.e. the treap's shape depends only on the (key, priority) set,
-    never on insertion order. Heap order, BST sidedness, one-child-
-    per-(parent,side) and single-root are additionally pinned per
-    node. The closed form is join+group work (no sequential pass) —
-    the canonical example of turning a pointer-machine build into a
-    set-at-a-time computation."""
-    import hashlib as _h
-    ids = sorted(r["doc_id"] for r in
-                 _t(spark, sf_dir, "documents")
-                 .filter(F.col("doc_id") < 512)
-                 .select("doc_id").collect())
-    prio = {k: int(_h.md5(f"tp:{k}".encode()).hexdigest()[:15], 16)
-            for k in ids}
-
-    class _N:
-        __slots__ = ("k", "l", "r", "p")
-
-        def __init__(self, k):
-            self.k, self.l, self.r, self.p = k, None, None, None
-
-    root = None
-
-    def rot(n):
-        p = n.p
-        g = p.p
-        if p.l is n:
-            p.l, n.r, = n.r, p
-            if p.l:
-                p.l.p = p
-        else:
-            p.r, n.l = n.l, p
-            if p.r:
-                p.r.p = p
-        n.p, p.p = g, n
-        if g:
-            if g.l is p:
-                g.l = n
-            else:
-                g.r = n
-        return n
-
-    for k in ids:
-        node = _N(k)
-        if root is None:
-            root = node
-            continue
-        cur = root
-        while True:
-            if k < cur.k:
-                if cur.l is None:
-                    cur.l = node
-                    node.p = cur
-                    break
-                cur = cur.l
-            else:
-                if cur.r is None:
-                    cur.r = node
-                    node.p = cur
-                    break
-                cur = cur.r
-        while node.p is not None and prio[node.k] < prio[node.p.k]:
-            node = rot(node)
-        if node.p is None:
-            root = node
-    out = []
-    stack = [root]
-    nodes = []
-    while stack:
-        n = stack.pop()
-        nodes.append(n)
-        if n.l:
-            stack.append(n.l)
-        if n.r:
-            stack.append(n.r)
-    for n in sorted(nodes, key=lambda x: x.k):
-        pk = n.p.k if n.p else -1
-        side = "root" if n.p is None else ("L" if n.p.l is n else "R")
-        heap_ok = n.p is None or prio[n.p.k] < prio[n.k]
-        bst_ok = n.p is None or (side == "L" and n.k < pk) \
-            or (side == "R" and n.k > pk)
-        out.append((n.k, prio[n.k], pk, side, heap_ok, bst_ok))
-    from collections import Counter
-    sib = Counter((pk, sd) for _, _, pk, sd, _, _ in out if pk != -1)
-    nroots = sum(1 for r in out if r[2] == -1)
-    rows = [(k, p, pk, sd, h, b,
-             1 if pk == -1 else sib[(pk, sd)],
-             pk == -1 or sib[(pk, sd)] == 1, nroots)
-            for k, p, pk, sd, h, b in out]
-    return spark.createDataFrame(
-        rows, "key long, prio long, parent_key long, side string,"
-              " heap_ok boolean, bst_ok boolean, siblings int,"
-              " unique_child_ok boolean, n_roots int")
-
-
-_TWOSAT_SQL = """
-WITH RECURSIVE vocab AS (
-  SELECT word, row_number() OVER (ORDER BY cnt DESC, word) - 1 AS v
-  FROM (SELECT word, count(*) AS cnt
-        FROM (SELECT unnest(string_split(text, ' ')) AS word
-              FROM documents)
-        WHERE word <> '' GROUP BY word)
-  QUALIFY v < 12
-), cl AS (
-  SELECT d.doc_id AS cid,
-         CAST(concat('0x', substr(md5('2sa:' ||
-           CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 12 AS a,
-         (CAST(concat('0x', substr(md5('2sa:' ||
-            CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 12
-          + 1 + CAST(concat('0x', substr(md5('2sb:' ||
-            CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 11) % 12
-           AS b,
-         d.text
-  FROM documents d WHERE d.doc_id < 20
-), lits AS (
-  SELECT c.cid, c.a, c.b,
-         CASE WHEN position(' ' || va.word || ' '
-              IN ' ' || c.text || ' ') > 0 THEN 1 ELSE 0 END AS pa,
-         CASE WHEN position(' ' || vb.word || ' '
-              IN ' ' || c.text || ' ') > 0 THEN 1 ELSE 0 END AS pb
-  FROM cl c JOIN vocab va ON va.v = c.a JOIN vocab vb ON vb.v = c.b
-), edges AS (
-  -- literal node id: 2*var + (1 if positive else 0 for the NEGATION?)
-  -- node(l) = 2*v + pol (pol 1 = positive literal x_v)
-  -- clause (l1 or l2): not-l1 -> l2 and not-l2 -> l1
-  SELECT 2 * a + (1 - pa) AS u, 2 * b + pb AS w FROM lits
-  UNION
-  SELECT 2 * b + (1 - pb), 2 * a + pa FROM lits
-), reach AS (
-  SELECT u, w FROM edges
-  UNION
-  SELECT r.u, e.w FROM reach r JOIN edges e ON e.u = r.w
-), reach2 AS (
-  SELECT u, w FROM reach
-  UNION
-  SELECT CAST(n AS BIGINT), CAST(n AS BIGINT)
-  FROM (SELECT unnest(range(0, 24)) AS n)
-), comp AS (
-  SELECT a.u AS node, min(a.w) AS c
-  FROM reach2 a JOIN reach2 b ON b.u = a.w AND b.w = a.u
-  GROUP BY a.u
-), rc AS (
-  SELECT c.c AS comp, count(DISTINCT c2.c) AS rcount
-  FROM comp c
-  JOIN reach2 r ON r.u = c.node
-  JOIN comp c2 ON c2.node = r.w
-  GROUP BY c.c
-), topo AS (
-  SELECT comp, row_number() OVER (ORDER BY rcount DESC, comp) AS pos
-  FROM rc
-), assign AS (
-  SELECT v.v, v.word,
-         tp.pos > tn.pos AS val,
-         cp.c = cn.c AS contradiction
-  FROM vocab v
-  JOIN comp cp ON cp.node = 2 * v.v + 1
-  JOIN comp cn ON cn.node = 2 * v.v
-  JOIN topo tp ON tp.comp = cp.c
-  JOIN topo tn ON tn.comp = cn.c
-), satq AS (
-  SELECT NOT bool_or(contradiction) AS satisfiable FROM assign
-), astr AS (
-  SELECT string_agg('x' || CAST(v AS VARCHAR) || '='
-                    || CASE WHEN val THEN 'T' ELSE 'F' END, ','
-                    ORDER BY v) AS assignment
-  FROM assign
-), chk AS (
-  SELECT l.cid, l.a, l.b, l.pa, l.pb,
-         (CASE WHEN l.pa = 1 THEN aa.val ELSE NOT aa.val END)
-         OR (CASE WHEN l.pb = 1 THEN ab.val ELSE NOT ab.val END)
-           AS clause_sat
-  FROM lits l
-  JOIN assign aa ON aa.v = l.a
-  JOIN assign ab ON ab.v = l.b
-)
-SELECT CAST(c.cid AS INTEGER) AS clause_id,
-       CAST(c.a AS INTEGER) AS var_a, CAST(c.pa AS INTEGER) AS pol_a,
-       CAST(c.b AS INTEGER) AS var_b, CAST(c.pb AS INTEGER) AS pol_b,
-       c.clause_sat,
-       (SELECT satisfiable FROM satq) AS satisfiable,
-       NOT (SELECT satisfiable FROM satq) OR c.clause_sat
-         AS certificate_ok,
-       (SELECT assignment FROM astr) AS assignment,
-       CAST((SELECT count(DISTINCT comp) FROM topo) AS INTEGER)
-         AS n_components
-FROM chk c
-"""
-
-
-@register("kg_2sat_implication", _TWOSAT_SQL)
-def kg_2sat_implication(spark, sf_dir):
-    """2-SAT solved by the implication-graph SCC method
-    (Aspvall-Plass-Tarjan) over DATA-DERIVED clauses: variables are the
-    12 most frequent corpus words, and each of the first 20 documents
-    contributes one clause whose two md5-chosen variables take the
-    polarity of the word's actual presence in that document. Each
-    clause (l1 ∨ l2) plants the two implications ¬l1→l2, ¬l2→l1;
-    strongly connected components come from pairwise reachability
-    (transitive closure as a recursive join — 24 nodes, the bounded
-    condensation of the lexicon family); a variable sharing a component
-    with its negation certifies UNSAT, otherwise the classic rule —
-    x is true iff comp(x) sits LATER than comp(¬x) in a topological
-    order (reach-count descending is provably topo-consistent since
-    A→B forces a strictly larger reachable set) — produces an
-    assignment whose validity is PINNED per clause: certificate_ok
-    demands every clause evaluate true under the produced assignment
-    whenever satisfiable (the solver cannot bluff — its output is
-    checked against the formula itself). Engine: bounded driver mirror
-    — the 24-node closure is planner-scale metadata; the corpus-scale
-    stages are the vocabulary count and the per-document polarity
-    probes."""
-    docs = _t(spark, sf_dir, "documents")
-    words = (docs.select(F.explode(F.split("text", " ")).alias("w"))
-             .filter(F.col("w") != "")
-             .groupBy("w").count().orderBy(F.desc("count"), "w")
-             .limit(12).collect())
-    vocab = {i: r["w"] for i, r in enumerate(words)}
-    import hashlib as _h
-
-    def h60(s):
-        return int(_h.md5(s.encode()).hexdigest()[:15], 16)
-    drows = (docs.filter(F.col("doc_id") < 20)
-             .select("doc_id", "text").collect())
-    clauses = []
-    for r in sorted(drows, key=lambda r: r["doc_id"]):
-        d = int(r["doc_id"])
-        a = h60(f"2sa:{d}") % 12
-        b = (a + 1 + h60(f"2sb:{d}") % 11) % 12
-        txt = f" {r['text']} "
-        pa = 1 if f" {vocab[a]} " in txt else 0
-        pb = 1 if f" {vocab[b]} " in txt else 0
-        clauses.append((d, a, pa, b, pb))
-    edges = set()
-    for _, a, pa, b, pb in clauses:
-        edges.add((2 * a + (1 - pa), 2 * b + pb))
-        edges.add((2 * b + (1 - pb), 2 * a + pa))
-    reach = {(n, n) for n in range(24)} | set(edges)
-    while True:
-        new = reach | {(u, w2) for (u, w) in reach
-                       for (w1, w2) in edges if w1 == w}
-        if new == reach:
-            break
-        reach = new
-    comp = {n: min(w for w in range(24)
-                   if (n, w) in reach and (w, n) in reach)
-            for n in range(24)}
-    comps = sorted(set(comp.values()))
-    rcount = {c: len({comp[w] for n in range(24) if comp[n] == c
-                      for (u, w) in reach if u == n})
-              for c in comps}
-    pos = {c: i + 1 for i, c in enumerate(
-        sorted(comps, key=lambda c: (-rcount[c], c)))}
-    contradiction = any(comp[2 * v] == comp[2 * v + 1]
-                        for v in range(12))
-    satisfiable = not contradiction
-    val = {v: pos[comp[2 * v + 1]] > pos[comp[2 * v]]
-           for v in range(12)}
-    astr = ",".join(f"x{v}=" + ("T" if val[v] else "F")
-                    for v in range(12))
-    rows = []
-    for cid, a, pa, b, pb in clauses:
-        sat = (val[a] if pa else not val[a]) or \
-              (val[b] if pb else not val[b])
-        rows.append((cid, a, pa, b, pb, sat, satisfiable,
-                     (not satisfiable) or sat, astr, len(comps)))
-    return spark.createDataFrame(
-        rows, "clause_id int, var_a int, pol_a int, var_b int,"
-              " pol_b int, clause_sat boolean, satisfiable boolean,"
-              " certificate_ok boolean, assignment string,"
-              " n_components int")
-
-
-# Chinese-remainder checksum constants: three 16-bit primes, their
-# cofactors M_j = M/p_j and Bezout inverses y_j = M_j^{-1} mod p_j
-# (extended Euclid, verified in-query by the inverse_ok pin).
-_CRT_M = 281170132523303  # 65521 * 65519 * 65497
-_CRT_ROWS = [(65521, 4291297943, 64156),
-             (65519, 4291428937, 22336),
-             (65497, 4292870399, 44533)]
-
-_CRT_SQL = """
-WITH cents AS (
-  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders
-), tot AS (
-  SELECT sum(c) AS s, count(*) AS n FROM cents
-), pr AS (
-  SELECT * FROM (VALUES (65521, 4291297943, 64156),
-                        (65519, 4291428937, 22336),
-                        (65497, 4292870399, 44533)) AS t(p, mj, yj)
-), res AS (
-  SELECT p, mj, yj, sum(c % p) % p AS r
-  FROM pr CROSS JOIN cents GROUP BY p, mj, yj
-), rec AS (
-  SELECT sum(((r * yj) % p) * mj) % 281170132523303 AS s_crt FROM res
-)
-SELECT CAST(p AS INTEGER) AS prime,
-       CAST(r AS BIGINT) AS residue,
-       CAST(mj AS BIGINT) AS m_j,
-       CAST(yj AS INTEGER) AS y_j,
-       (mj % p) * yj % p = 1 AS inverse_ok,
-       CAST(((r * yj) % p) * mj AS BIGINT) AS term,
-       CAST((SELECT s_crt FROM rec) AS BIGINT) AS s_crt,
-       CAST((SELECT s FROM tot) AS BIGINT) AS s_direct,
-       (SELECT s_crt FROM rec) = (SELECT s FROM tot) AS crt_ok,
-       (SELECT s FROM tot) < 281170132523303 AS fits_modulus,
-       CAST((SELECT n FROM tot) AS BIGINT) AS n_orders
-FROM res
-"""
-
-
-@register("q_orders_crt_checksum", _CRT_SQL)
-def q_orders_crt_checksum(spark, sf_dir):
-    """Residue-number-system aggregation by the Chinese Remainder
-    Theorem: the exact corpus-wide sum of order prices in cents is
-    computed three times as residues mod three coprime 16-bit primes —
-    sum(c mod p) mod p, a per-partition-safe fold whose intermediate
-    values stay below 2⁶³ at ANY corpus scale (the per-row addend is
-    < 2¹⁶, so even 10¹⁴ rows cannot overflow a long where the direct
-    cents sum eventually would under ANSI mode) — and then reconstructed
-    exactly by Garner-free CRT recombination S = Σ ((r_j·y_j) mod p_j)
-    · M_j mod M, kept inside int64 by reducing r_j·y_j modulo p_j
-    BEFORE the cofactor multiply (each term ≤ p_j·M_j = M ≈ 2.8·10¹⁴).
-    The Bezout inverses are extended-Euclid constants verified in-query
-    ((M_j mod p_j)·y_j ≡ 1, inverse_ok), the reconstruction is pinned
-    equal to the directly computed sum (crt_ok — CRT uniqueness on
-    [0, M)), and the applicability premise S < M is pinned
-    (fits_modulus). Three residue aggregates over a broadcast prime
-    table — one map-side pass, no shuffle beyond the 3-row combine."""
-    cents = _t(spark, sf_dir, "orders").select(
-        F.round(F.col("o_totalprice") * 100).cast("long").alias("c"))
-    tot = cents.agg(F.sum("c").alias("s"), F.count(F.lit(1)).alias("n"))
-    pr = spark.createDataFrame(_CRT_ROWS, "p long, mj long, yj long")
-    res = (cents.crossJoin(F.broadcast(pr))
-           .groupBy("p", "mj", "yj")
-           .agg((F.sum(F.col("c") % F.col("p")) % F.col("p"))
-                .alias("r")))
-    rec = res.agg((F.sum(F.expr("((r * yj) % p) * mj"))
-                   % F.lit(_CRT_M)).alias("s_crt"))
-    return (res.crossJoin(F.broadcast(rec)).crossJoin(F.broadcast(tot))
-            .select(F.col("p").cast("int").alias("prime"),
-                    F.col("r").cast("long").alias("residue"),
-                    F.col("mj").cast("long").alias("m_j"),
-                    F.col("yj").cast("int").alias("y_j"),
-                    (F.expr("(mj % p) * yj % p") == 1)
-                    .alias("inverse_ok"),
-                    F.expr("((r * yj) % p) * mj").cast("long")
-                    .alias("term"),
-                    F.col("s_crt").cast("long").alias("s_crt"),
-                    F.col("s").cast("long").alias("s_direct"),
-                    (F.col("s_crt") == F.col("s")).alias("crt_ok"),
-                    (F.col("s") < F.lit(_CRT_M)).alias("fits_modulus"),
-                    F.col("n").cast("long").alias("n_orders")))
-
-
-_YANNAKAKIS_SQL = """
-WITH c0 AS (
-  SELECT c_custkey FROM customer
-  WHERE c_mktsegment = 'BUILDING' AND c_acctbal > 0
-), o0 AS (
-  SELECT o_orderkey, o_custkey FROM orders WHERE o_orderstatus <> 'P'
-), l0 AS (
-  SELECT l_orderkey, l_linenumber,
-         CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
-  FROM lineitem WHERE l_quantity >= 25
-), o1 AS (  -- bottom-up: O := O semijoin L
-  SELECT * FROM o0 WHERE EXISTS
-    (SELECT 1 FROM l0 WHERE l0.l_orderkey = o0.o_orderkey)
-), c1 AS (  -- bottom-up: C := C semijoin O
-  SELECT * FROM c0 WHERE EXISTS
-    (SELECT 1 FROM o1 WHERE o1.o_custkey = c0.c_custkey)
-), o2 AS (  -- top-down: O := O semijoin C
-  SELECT * FROM o1 WHERE EXISTS
-    (SELECT 1 FROM c1 WHERE c1.c_custkey = o1.o_custkey)
-), l1 AS (  -- top-down: L := L semijoin O
-  SELECT * FROM l0 WHERE EXISTS
-    (SELECT 1 FROM o2 WHERE o2.o_orderkey = l0.l_orderkey)
-), jfull AS (
-  SELECT c0.c_custkey, o0.o_orderkey, l0.l_linenumber, l0.cents
-  FROM c0 JOIN o0 ON o0.o_custkey = c0.c_custkey
-          JOIN l0 ON l0.l_orderkey = o0.o_orderkey
-), jred AS (
-  SELECT c1.c_custkey, o2.o_orderkey, l1.l_linenumber, l1.cents
-  FROM c1 JOIN o2 ON o2.o_custkey = c1.c_custkey
-          JOIN l1 ON l1.l_orderkey = o2.o_orderkey
-), stats AS (
-  -- participation is a semi-join count (NOT a distinct count in the
-  -- join: (l_orderkey, l_linenumber) is not unique in the synthetic
-  -- lineitem, so key-collision would undercount)
-  SELECT 'customer' AS relation,
-         (SELECT count(*) FROM c0) AS rows_filtered,
-         (SELECT count(*) FROM c1) AS rows_reduced,
-         (SELECT count(*) FROM c1 WHERE EXISTS
-            (SELECT 1 FROM jred j WHERE j.c_custkey = c1.c_custkey))
-           AS participants
-  UNION ALL
-  SELECT 'orders',
-         (SELECT count(*) FROM o0), (SELECT count(*) FROM o2),
-         (SELECT count(*) FROM o2 WHERE EXISTS
-            (SELECT 1 FROM jred j WHERE j.o_orderkey = o2.o_orderkey))
-  UNION ALL
-  SELECT 'lineitem',
-         (SELECT count(*) FROM l0), (SELECT count(*) FROM l1),
-         (SELECT count(*) FROM l1 WHERE EXISTS
-            (SELECT 1 FROM jred j WHERE j.o_orderkey = l1.l_orderkey
-               AND j.l_linenumber = l1.l_linenumber))
-), jt AS (
-  SELECT (SELECT count(*) FROM jfull) AS jf,
-         (SELECT count(*) FROM jred) AS jr,
-         (SELECT coalesce(sum(cents), 0) FROM jfull) AS sf,
-         (SELECT coalesce(sum(cents), 0) FROM jred) AS sr
-)
-SELECT relation,
-       CAST(rows_filtered AS BIGINT) AS rows_filtered,
-       CAST(rows_reduced AS BIGINT) AS rows_reduced,
-       CAST(rows_filtered - rows_reduced AS BIGINT) AS dangling_removed,
-       participants = rows_reduced AS all_participate,
-       CAST(jt.jf AS BIGINT) AS join_rows,
-       jt.jf = jt.jr AS join_preserved,
-       CAST(jt.sf AS BIGINT) AS join_cents,
-       jt.sf = jt.sr AS cents_preserved
-FROM stats CROSS JOIN jt
-"""
-
-
-@register("q_yannakakis_reduction", _YANNAKAKIS_SQL)
-def q_yannakakis_reduction(spark, sf_dir):
-    """Yannakakis full-reducer over the acyclic customer—orders—lineitem
-    chain (the 1981 algorithm behind every modern acyclic-join
-    optimizer): base relations are first filtered (BUILDING customers
-    with positive balance, non-'P' orders, quantity ≥ 25 lineitems) so
-    real dangling tuples exist at every level, then one bottom-up
-    semi-join sweep (O ⋉ L, C ⋉ O) and one top-down sweep (O ⋉ C,
-    L ⋉ O) reduce each relation. The theorem the pass exists for is
-    pinned per relation: after the two sweeps EVERY surviving tuple
-    participates in the full join (all_participate — distinct join keys
-    equal the reduced cardinality), and the reduction is lossless —
-    join row count and the exact cents total computed from reduced
-    relations equal the unreduced join's (join_preserved,
-    cents_preserved). The semi-joins are broadcast/shuffle left-semi
-    joins that never materialize the join; at 100 TB this is exactly
-    the pass that keeps an acyclic multiway join linear instead of
-    paying intermediate blow-up."""
-    c0 = (_t(spark, sf_dir, "customer")
-          .filter((F.col("c_mktsegment") == "BUILDING")
-                  & (F.col("c_acctbal") > 0))
-          .select("c_custkey"))
-    o0 = (_t(spark, sf_dir, "orders")
-          .filter(F.col("o_orderstatus") != "P")
-          .select("o_orderkey", "o_custkey"))
-    l0 = (_t(spark, sf_dir, "lineitem")
-          .filter(F.col("l_quantity") >= 25)
-          .select("l_orderkey", "l_linenumber",
-                  F.round(F.col("l_extendedprice") * 100).cast("long")
-                  .alias("cents")))
-    def _semi(left, lkey, right, rkey):
-        # rename the probe key: a fresh attribute id keeps Spark's
-        # ambiguous-self-join detector out of the shared-lineage chain
-        keys = right.select(F.col(rkey).alias("__k")).distinct()
-        return left.join(keys, F.col(lkey) == F.col("__k"),
-                         "left_semi")
-
-    o1 = _semi(o0, "o_orderkey", l0, "l_orderkey")
-    c1 = _semi(c0, "c_custkey", o1, "o_custkey")
-    o2 = _semi(o1, "o_custkey", c1, "c_custkey")
-    l1 = _semi(l0, "l_orderkey", o2, "o_orderkey")
-
-    def _chain(c, o, l):
-        return (c.alias("c")
-                .join(o.alias("o"),
-                      F.col("c.c_custkey") == F.col("o.o_custkey"))
-                .join(l.alias("l"),
-                      F.col("o.o_orderkey") == F.col("l.l_orderkey"))
-                .select(F.col("c.c_custkey").alias("c_custkey"),
-                        F.col("o.o_orderkey").alias("o_orderkey"),
-                        F.col("l.l_linenumber").alias("l_linenumber"),
-                        F.col("l.cents").alias("cents")))
-
-    jfull = _chain(c0, o0, l0)
-    jred = _chain(c1, o2, l1)
-    jred = jred.persist()
-
-    # participation is a semi-join count (NOT a distinct count in the
-    # join: (l_orderkey, l_linenumber) is not unique in the synthetic
-    # lineitem, so key-collision would undercount)
-    def _participants(red, keys):
-        probe = jred.select(*[F.col(k).alias(f"__{k}") for k in keys]) \
-            .distinct()
-        cond = None
-        for k in keys:
-            eq = F.col(k) == F.col(f"__{k}")
-            cond = eq if cond is None else cond & eq
-        return red.join(probe, cond, "left_semi").agg(
-            F.count(F.lit(1)).alias("participants"))
-
-    stats = []
-    for rel, base, red, pk in [
-            ("customer", c0, c1, ["c_custkey"]),
-            ("orders", o0, o2, ["o_orderkey"]),
-            ("lineitem", l0, l1, ["l_orderkey", "l_linenumber"])]:
-        red_keys = red
-        if rel == "lineitem":
-            # jred's lineitem key columns are (o_orderkey, l_linenumber)
-            red_keys = red.select(
-                F.col("l_orderkey").alias("o_orderkey"), "l_linenumber")
-            pk = ["o_orderkey", "l_linenumber"]
-        stats.append(spark.createDataFrame(
-            [(rel,)], "relation string")
-            .crossJoin(F.broadcast(base.agg(
-                F.count(F.lit(1)).alias("rows_filtered"))))
-            .crossJoin(F.broadcast(red.agg(
-                F.count(F.lit(1)).alias("rows_reduced"))))
-            .crossJoin(F.broadcast(_participants(red_keys, pk))))
-    st = stats[0].unionByName(stats[1]).unionByName(stats[2])
-    jt = (jfull.agg(F.count(F.lit(1)).alias("jf"),
-                    F.coalesce(F.sum("cents"), F.lit(0)).alias("sf"))
-          .crossJoin(jred.agg(
-              F.count(F.lit(1)).alias("jr"),
-              F.coalesce(F.sum("cents"), F.lit(0)).alias("sr"))))
-    return (st.crossJoin(F.broadcast(jt))
-            .select("relation",
-                    F.col("rows_filtered").cast("long"),
-                    F.col("rows_reduced").cast("long"),
-                    (F.col("rows_filtered") - F.col("rows_reduced"))
-                    .cast("long").alias("dangling_removed"),
-                    (F.col("participants") == F.col("rows_reduced"))
-                    .alias("all_participate"),
-                    F.col("jf").cast("long").alias("join_rows"),
-                    (F.col("jf") == F.col("jr")).alias("join_preserved"),
-                    F.col("sf").cast("long").alias("join_cents"),
-                    (F.col("sf") == F.col("sr"))
-                    .alias("cents_preserved")))
-
-
-# Number-theoretic transform constants: p = 998244353 (119·2²³ + 1, the
-# NTT-friendly prime of competitive programming and zk-STARK fields),
-# primitive root 3, ω = 3^((p−1)/32) a primitive 32nd root of unity.
-# All derived constants are deterministic pure-math values.
-_NTT_P = 998244353
-_NTT_W = pow(3, (_NTT_P - 1) // 32, _NTT_P)
-_NTT_WI = pow(_NTT_W, -1, _NTT_P)
-_NTT_NINV = pow(32, -1, _NTT_P)
-# ω^(2^b) for the bit-decomposition twiddle product (e < 16 → bits 0..3)
-_NTT_W2B = [pow(_NTT_W, 1 << b, _NTT_P) for b in range(4)]
-# full power tables ω^t / ω^(−t) for the direct-evaluation sides
-_NTT_PW = [(t, pow(_NTT_W, t, _NTT_P), pow(_NTT_WI, t, _NTT_P))
-           for t in range(32)]
-
-_NTT_SQL = f"""
-WITH hrs AS (
-  SELECT CAST(extract(hour FROM ts) AS BIGINT) AS h,
-         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS cx,
-         sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS cy
-  FROM events GROUP BY 1
-), idx AS (
-  SELECT CAST(unnest(range(0, 32)) AS BIGINT) AS i
-), ser AS (
-  SELECT i.i, coalesce(h.cx, 0) % {_NTT_P} AS x,
-         coalesce(h.cy, 0) % {_NTT_P} AS y
-  FROM idx i LEFT JOIN hrs h ON h.h = i.i
-), pw AS (
-  SELECT * FROM (VALUES
-    {",".join(f"({t}, {wf}, {wi})" for t, wf, wi in _NTT_PW)}
-  ) AS t(t, wf, wi)
-), ntt AS (
-  SELECT k.i AS k,
-         sum(s.x * p.wf % {_NTT_P}) % {_NTT_P} AS nx,
-         sum(s.y * p.wf % {_NTT_P}) % {_NTT_P} AS ny
-  FROM idx k CROSS JOIN ser s
-  JOIN pw p ON p.t = (k.i * s.i) % 32
-  GROUP BY k.i
-), zt AS (
-  SELECT k, nx, ny, nx * ny % {_NTT_P} AS zz FROM ntt
-), cni AS (
-  SELECT i.i AS k,
-         (sum(z.zz * p.wi % {_NTT_P}) % {_NTT_P})
-           * {_NTT_NINV} % {_NTT_P} AS cn
-  FROM idx i CROSS JOIN zt z
-  JOIN pw p ON p.t = (i.i * z.k) % 32
-  GROUP BY i.i
-), cdi AS (
-  SELECT k.i AS k,
-         sum(a.x * b.y % {_NTT_P}) % {_NTT_P} AS cd
-  FROM idx k CROSS JOIN ser a
-  JOIN ser b ON b.i = ((k.i - a.i) % 32 + 32) % 32
-  GROUP BY k.i
-)
-SELECT CAST(n.k AS INTEGER) AS k,
-       CAST(s.x AS BIGINT) AS x, CAST(s.y AS BIGINT) AS y,
-       CAST(n.nx AS BIGINT) AS ntt_x, CAST(n.ny AS BIGINT) AS ntt_y,
-       CAST(z.zz AS BIGINT) AS z,
-       CAST(cn.cn AS BIGINT) AS conv_ntt,
-       CAST(cd.cd AS BIGINT) AS conv_direct,
-       cn.cn = cd.cd AS conv_ok,
-       32 AS n, CAST({_NTT_P} AS BIGINT) AS p_mod
-FROM ntt n JOIN ser s ON s.i = n.k JOIN zt z ON z.k = n.k
-JOIN cni cn ON cn.k = n.k JOIN cdi cd ON cd.k = n.k
-"""
-
-
-@register("q_events_ntt_convolution", _NTT_SQL)
-def q_events_ntt_convolution(spark, sf_dir):
-    """Number-theoretic transform (the exact-integer FFT inside
-    Schönhage-Strassen multiplication, zk-STARK provers and every fast
-    polynomial library) over two real 32-sample series — clicks and
-    purchases per hour-of-day — mod p = 998244353 with ω = 3^((p−1)/32).
-    The ENGINE computes the forward transforms by the genuine iterative
-    Cooley-Tukey algorithm: bit-reversed load, then five butterfly
-    stages, each one a filter/join/explode over the 32-row frame, with
-    twiddles ω^e assembled from the constant squares ω^(2^b) by e's bit
-    decomposition — no floats, every product reduced mod p inside
-    int64. The ORACLE evaluates the same transform by the direct
-    O(n²) DFT sum, so gate hash-equality is a machine-checked proof
-    that Cooley-Tukey equals the defining polynomial evaluation on this
-    input. On top, the convolution theorem is pinned inside each
-    engine (conv_ok): INTT(NTT(x)·NTT(y))·n⁻¹ — inverse computed by
-    direct evaluation at ω^(−ik) — equals the directly computed cyclic
-    convolution Σ x_i·y_{(k−i) mod 32}. The hourly aggregate is the
-    only data-sized stage (one map-side conditional count); the
-    transform itself is planner-scale, exactly how a distributed
-    engine would batch many small exact transforms per partition."""
-    p = _NTT_P
-    hrs = (_t(spark, sf_dir, "events")
-           .groupBy(F.hour("ts").cast("long").alias("h"))
-           .agg(F.sum(F.when(F.col("event_type") == "click", 1)
-                      .otherwise(0)).alias("cx"),
-                F.sum(F.when(F.col("event_type") == "purchase", 1)
-                      .otherwise(0)).alias("cy")))
-    idx = spark.range(32).select(F.col("id").cast("long").alias("i"))
-    ser = (idx.join(F.broadcast(hrs), F.col("h") == F.col("i"), "left")
-           .select("i",
-                   (F.coalesce("cx", F.lit(0)) % p).alias("x"),
-                   (F.coalesce("cy", F.lit(0)) % p).alias("y")))
-    rev = ("(i % 2) * 16 + ((i div 2) % 2) * 8 + ((i div 4) % 2) * 4"
-           " + ((i div 8) % 2) * 2 + (i div 16) % 2")
-    v = (idx.withColumn("r", F.expr(rev))
-         .join(ser.select(F.col("i").alias("si"), "x", "y"),
-               F.col("r") == F.col("si"))
-         .select("i", F.col("x").alias("vx"), F.col("y").alias("vy")))
-    for s in range(1, 6):
-        half, step = 1 << (s - 1), 32 >> s
-        lo = v.filter((F.col("i") % (1 << s)) < half).select(
-            F.col("i").alias("li"), F.col("vx").alias("lx"),
-            F.col("vy").alias("ly"))
-        hi = v.filter((F.col("i") % (1 << s)) >= half).select(
-            F.col("i").alias("ih"), F.col("vx").alias("hx"),
-            F.col("vy").alias("hy"))
-        pair = (lo.join(hi, F.col("ih") == F.col("li") + half)
-                .withColumn("e", (F.col("li") % half) * step))
-        fs = [F.when(F.col("e").bitwiseAND(1 << b) > 0,
-                     F.lit(_NTT_W2B[b])).otherwise(F.lit(1))
-              .cast("long")  # ω^(2^b) < p fits int32; its square doesn't
-              for b in range(4)]
-        pair = pair.withColumn(
-            "w", (fs[0] * fs[1] % p) * (fs[2] * fs[3] % p) % p)
-        nlx = (F.col("lx") + F.col("w") * F.col("hx") % p) % p
-        nhx = F.pmod(F.col("lx") - F.col("w") * F.col("hx") % p,
-                     F.lit(p))
-        nly = (F.col("ly") + F.col("w") * F.col("hy") % p) % p
-        nhy = F.pmod(F.col("ly") - F.col("w") * F.col("hy") % p,
-                     F.lit(p))
-        v = (pair.select(F.explode(F.array(
-            F.struct(F.col("li").alias("i"), nlx.alias("vx"),
-                     nly.alias("vy")),
-            F.struct(F.col("ih").alias("i"), nhx.alias("vx"),
-                     nhy.alias("vy")))).alias("bf"))
-            .select("bf.i", "bf.vx", "bf.vy"))
-    zdf = v.select(F.col("i").alias("k"), F.col("vx").alias("nx"),
-                   F.col("vy").alias("ny"),
-                   (F.col("vx") * F.col("vy") % p).alias("zz"))
-    pw = spark.createDataFrame(_NTT_PW, "t long, wf long, wi long")
-    cni = (idx.crossJoin(zdf.select(F.col("k").alias("zk"), "zz"))
-           .join(F.broadcast(pw),
-                 F.col("t") == (F.col("i") * F.col("zk")) % 32)
-           .groupBy("i")
-           .agg(((F.sum(F.col("zz") * F.col("wi") % p) % p)
-                 * _NTT_NINV % p).alias("cn")))
-    a = ser.select(F.col("i").alias("ai"), F.col("x").alias("ax"))
-    b = ser.select(F.col("i").alias("bi"), F.col("y").alias("by"))
-    cdi = (idx.crossJoin(a)
-           .join(b, F.col("bi")
-                 == F.pmod(F.col("i") - F.col("ai"), F.lit(32)))
-           .groupBy("i")
-           .agg((F.sum(F.col("ax") * F.col("by") % p) % p).alias("cd")))
-    return (zdf.join(ser.select(F.col("i").alias("k"), "x", "y"), "k")
-            .join(cni.select(F.col("i").alias("k"), "cn"), "k")
-            .join(cdi.select(F.col("i").alias("k"), "cd"), "k")
-            .select(F.col("k").cast("int").alias("k"),
-                    F.col("x").cast("long").alias("x"),
-                    F.col("y").cast("long").alias("y"),
-                    F.col("nx").cast("long").alias("ntt_x"),
-                    F.col("ny").cast("long").alias("ntt_y"),
-                    F.col("zz").cast("long").alias("z"),
-                    F.col("cn").cast("long").alias("conv_ntt"),
-                    F.col("cd").cast("long").alias("conv_direct"),
-                    (F.col("cn") == F.col("cd")).alias("conv_ok"),
-                    F.lit(32).cast("int").alias("n"),
-                    F.lit(p).cast("long").alias("p_mod")))
-
-
-_SHA256_SQL = """
-SELECT doc_id,
-       md5(text) AS msg,
-       substr(text, 1, 13) AS prefix,
-       -- the oracle's "scratch" IS its native sha256: gate hash-equality
-       -- therefore pins the engine's from-scratch FIPS 180-4 rounds
-       -- against DuckDB's independent native implementation
-       sha256(md5(text)) AS scratch_sha_msg,
-       sha256(md5(text)) AS native_sha_msg,
-       sha256(substr(text, 1, 13)) AS scratch_sha_prefix,
-       sha256(substr(text, 1, 13)) AS native_sha_prefix,
-       TRUE AS match_msg, TRUE AS match_prefix
-FROM documents
-"""
-
-
-@register("text_sha256_scratch", _SHA256_SQL)
-def text_sha256_scratch(spark, sf_dir):
-    """SHA-256 implemented from scratch (FIPS 180-4: message-schedule
-    expansion plus all 64 compression rounds) as a numpy-vectorized
-    Arrow UDF — every row in the batch advances through each round
-    together on uint32 arrays, no per-row Python — and pinned THREE
-    ways on real corpus data: per row against Spark's JVM-native
-    `sha2(…, 256)` (match_msg / match_prefix), and through the gate's
-    value hash against DuckDB's native `sha256` — three independent
-    codebases forced to agree on every digest. Two message shapes per
-    document exercise the padding logic: the fixed 32-byte md5-hex
-    string and a variable-length 13-char text prefix (UTF-8 encoded, so
-    multibyte characters hit the byte-length padding path). Map-side
-    only — the UDF is embarrassingly partition-parallel, the shape of
-    content-hashing 10⁹ documents for dedup/integrity at 100 TB."""
-    from .functions.sha256 import sha256_hex_udf
-    _sha = sha256_hex_udf()
-
-    return (_t(spark, sf_dir, "documents")
-            .select("doc_id",
-                    F.md5("text").alias("msg"),
-                    F.substring("text", 1, 13).alias("prefix"))
-            .select("doc_id", "msg", "prefix",
-                    _sha("msg").alias("scratch_sha_msg"),
-                    F.sha2("msg", 256).alias("native_sha_msg"),
-                    _sha("prefix").alias("scratch_sha_prefix"),
-                    F.sha2("prefix", 256).alias("native_sha_prefix"))
-            .withColumn("match_msg", F.col("scratch_sha_msg")
-                        == F.col("native_sha_msg"))
-            .withColumn("match_prefix", F.col("scratch_sha_prefix")
-                        == F.col("native_sha_prefix")))
-
-
-_SERIALIZABILITY_SQL = """
-WITH ops AS (
-  SELECT user_id AS txn, event_type AS obj, event_id,
-         CASE WHEN value >= 100 THEN 1 ELSE 0 END AS w
-  FROM events ORDER BY event_id LIMIT 60
-), grouped AS (
-  SELECT txn, obj, w,
-         row_number() OVER (ORDER BY txn, event_id) AS pos0
-  FROM ops
-), sched AS (
-  SELECT 'raw' AS variant, txn, obj, w, event_id AS t FROM ops
-  UNION ALL
-  SELECT 'grouped', txn, obj, w, pos0 FROM grouped
-), conf AS (
-  SELECT a.variant, a.txn AS tf, b.txn AS tt,
-         count(*) AS n_pairs
-  FROM sched a JOIN sched b
-    ON b.variant = a.variant AND b.obj = a.obj
-   AND a.txn <> b.txn AND a.t < b.t AND (a.w = 1 OR b.w = 1)
-  GROUP BY a.variant, a.txn, b.txn
-), reach AS (
-  WITH RECURSIVE r(variant, src, dst) AS (
-    SELECT variant, tf, tt FROM conf
-    UNION
-    SELECT r.variant, r.src, c.tt
-    FROM r JOIN conf c ON c.variant = r.variant AND c.tf = r.dst
-  ) SELECT * FROM r
-), cyc AS (
-  SELECT variant,
-         bool_or(src = dst) AS cyclic
-  FROM reach GROUP BY variant
-), txns AS (
-  SELECT DISTINCT variant, txn FROM sched
-), anc AS (
-  SELECT t.variant, t.txn,
-         (SELECT count(DISTINCT r.src) FROM reach r
-          WHERE r.variant = t.variant AND r.dst = t.txn
-            AND r.src <> t.txn) AS n_anc
-  FROM txns t
-), pos AS (
-  SELECT variant, txn, n_anc,
-         row_number() OVER (PARTITION BY variant
-                            ORDER BY n_anc, txn) AS p
-  FROM anc
-), meta AS (
-  SELECT variant, count(*) AS n_txns FROM txns GROUP BY variant
-)
-SELECT c.variant, CAST(c.tf AS BIGINT) AS txn_from,
-       CAST(c.tt AS BIGINT) AS txn_to,
-       CAST(c.n_pairs AS BIGINT) AS n_conflict_pairs,
-       y.cyclic, NOT y.cyclic AS serializable,
-       CAST(pf.p AS INTEGER) AS pos_from,
-       CAST(pt.p AS INTEGER) AS pos_to,
-       y.cyclic OR pf.p < pt.p AS edge_respected,
-       CAST(m.n_txns AS INTEGER) AS n_txns
-FROM conf c
-JOIN cyc y ON y.variant = c.variant
-JOIN pos pf ON pf.variant = c.variant AND pf.txn = c.tf
-JOIN pos pt ON pt.variant = c.variant AND pt.txn = c.tt
-JOIN meta m ON m.variant = c.variant
-"""
-
-
-@register("q_txn_conflict_serializability", _SERIALIZABILITY_SQL)
-def q_txn_conflict_serializability(spark, sf_dir):
-    """Conflict-serializability testing (the precedence-graph theorem
-    of transaction theory: a schedule is conflict-serializable iff its
-    precedence graph is acyclic) on a schedule built from real data —
-    the first 60 events are operations (txn = user, object =
-    event_type, write iff value ≥ 100) — in TWO variants judged side
-    by side: the raw interleaved schedule as the data produced it, and
-    the same operations rearranged txn-by-txn ('grouped'), which is
-    serial by construction and MUST come out acyclic. Conflict edges
-    are distinct (t1, t2) pairs with an ordered same-object op pair at
-    least one of which writes; cyclicity comes from the transitive
-    closure; for acyclic variants a serial order is derived by
-    ancestor-count rank — topo-consistent because u→v implies
-    anc(v) ⊇ anc(u) ∪ {u} — and pinned edge-by-edge (edge_respected:
-    every conflict edge runs forward in the recovered serial order).
-    Engine: bounded driver replay over the 60 collected ops (the same
-    planner-scale discipline as the 2-SAT row); oracle: recursive-CTE
-    closure. The raw variant's verdict is honestly data-derived —
-    whatever the interleaving says."""
-    rows = (_t(spark, sf_dir, "events")
-            .select("user_id", "event_type", "event_id",
-                    (F.col("value") >= 100).alias("w"))
-            .orderBy("event_id").limit(60).collect())
-    ops = [(r["user_id"], r["event_type"], r["event_id"],
-            1 if r["w"] else 0) for r in rows]
-    grouped = sorted(ops, key=lambda o: (o[0], o[2]))
-    scheds = {"raw": [(t, o, i, w) for (t, o, i, w) in ops],
-              "grouped": [(t, o, p, w) for p, (t, o, _, w)
-                          in enumerate(grouped)]}
-    out = []
-    for variant, sched in scheds.items():
-        conf = {}
-        for (t1, o1, i1, w1) in sched:
-            for (t2, o2, i2, w2) in sched:
-                if (o1 == o2 and t1 != t2 and i1 < i2
-                        and (w1 or w2)):
-                    conf[(t1, t2)] = conf.get((t1, t2), 0) + 1
-        edges = set(conf)
-        reach = set(edges)
-        while True:
-            new = reach | {(a, d) for (a, b) in reach
-                           for (c, d) in edges if b == c}
-            if new == reach:
-                break
-            reach = new
-        cyclic = any(a == b for (a, b) in reach)
-        txns = sorted({t for (t, _, _, _) in sched})
-        n_anc = {t: len({s for (s, d) in reach if d == t and s != t})
-                 for t in txns}
-        order = sorted(txns, key=lambda t: (n_anc[t], t))
-        pos = {t: i + 1 for i, t in enumerate(order)}
-        for (tf, tt), n_pairs in sorted(conf.items()):
-            out.append((variant, tf, tt, n_pairs, cyclic, not cyclic,
-                        pos[tf], pos[tt], cyclic or pos[tf] < pos[tt],
-                        len(txns)))
-    return spark.createDataFrame(
-        out, "variant string, txn_from long, txn_to long,"
-             " n_conflict_pairs long, cyclic boolean,"
-             " serializable boolean, pos_from int, pos_to int,"
-             " edge_respected boolean, n_txns int")
-
-
-_MVCC_SQL = """
-WITH evt AS (
-  SELECT event_type, event_id,
-         user_id * 1000 + CAST(date_part('doy', ts) AS BIGINT) AS txn
-  FROM events
-), commits AS (
-  SELECT txn, max(event_id) AS commit_ts
-  FROM evt GROUP BY txn
-), writes AS (
-  SELECT e.event_type AS obj, e.event_id AS version,
-         e.txn, c.commit_ts
-  FROM evt e JOIN commits c ON c.txn = e.txn
-), mx AS (
-  SELECT max(event_id) AS m FROM events
-), snaps AS (
-  SELECT CAST(q AS BIGINT) AS q,
-         (SELECT m FROM mx) * CAST(q AS BIGINT) // 100 AS snap_ts
-  FROM (SELECT unnest([25, 50, 75, 100]) AS q)
-), vis AS (
-  SELECT s.q, s.snap_ts, w.obj, w.version, w.txn, w.commit_ts,
-         row_number() OVER (PARTITION BY s.q, w.obj
-                            ORDER BY w.version DESC) AS rn,
-         count(*) OVER (PARTITION BY s.q, w.obj) AS n_candidates
-  FROM snaps s JOIN writes w ON w.commit_ts <= s.snap_ts
-)
-SELECT CAST(v.q AS INTEGER) AS snap_pct,
-       CAST(v.snap_ts AS BIGINT) AS snap_ts,
-       v.obj,
-       CAST(v.version AS BIGINT) AS visible_version,
-       CAST(v.txn AS BIGINT) AS writer_txn,
-       CAST(v.commit_ts AS BIGINT) AS writer_commit,
-       v.commit_ts <= v.snap_ts AS no_dirty_read,
-       v.version <= v.snap_ts AS no_future_version,
-       CAST(v.n_candidates AS BIGINT) AS n_candidates,
-       coalesce(v.version >= lag(v.version) OVER
-                  (PARTITION BY v.obj ORDER BY v.q), TRUE)
-         AS monotone_ok
-FROM vis v WHERE v.rn = 1
-"""
-
-
-@register("q_events_mvcc_snapshot", _MVCC_SQL)
-def q_events_mvcc_snapshot(spark, sf_dir):
-    """MVCC snapshot-isolation visibility (the read rule inside
-    PostgreSQL/Spanner/Delta readers): every event is a version write
-    of its object (= event_type) at version ts = event_id by txn =
-    user-day (so commits spread across the whole timeline instead of
-    clustering at the end), a txn commits at its LAST write
-    (commit_ts = max event_id within the user-day), and four snapshot
-    timestamps at the 25/50/75/100% points of the
-    event-id range each read the LATEST version whose writing txn
-    committed at or before the snapshot. The isolation guarantees are
-    pinned per visible row: no dirty read (the writer really committed
-    ≤ snapshot), and snapshot monotonicity per object (a later
-    snapshot never sees an older version — lag window over snapshots).
-    no_future_version is emitted honestly UNPINNED: under snapshot
-    isolation a committed txn's earlier writes are visible even when
-    the write itself happened after the snapshot point — exactly the
-    difference between commit-time and write-time visibility. Fully
-    distributed: one per-user commit aggregate, one snapshot × writes
-    join pruned by commit_ts, one window — no replay anywhere, the
-    shape of a snapshot read over 10⁹ versions."""
-    ev = (_t(spark, sf_dir, "events")
-          .select("event_type", "event_id",
-                  (F.col("user_id") * 1000
-                   + F.dayofyear("ts").cast("long")).alias("txn")))
-    commits = ev.groupBy("txn").agg(
-        F.max("event_id").alias("commit_ts"))
-    writes = (ev.join(commits, "txn")
-              .select(F.col("event_type").alias("obj"),
-                      F.col("event_id").alias("version"),
-                      "txn", "commit_ts"))
-    mx = ev.agg(F.max("event_id").alias("m"))
-    snaps = (spark.createDataFrame([(25,), (50,), (75,), (100,)],
-                                   "q long")
-             .crossJoin(F.broadcast(mx))
-             .select("q", F.expr("m * q div 100").alias("snap_ts")))
-    vis = (F.broadcast(snaps)
-           .join(writes, F.col("commit_ts") <= F.col("snap_ts"))
-           .withColumn("rn", F.row_number().over(
-               Window.partitionBy("q", "obj")
-               .orderBy(F.desc("version"))))
-           .withColumn("n_candidates", F.count(F.lit(1)).over(
-               Window.partitionBy("q", "obj"))))
-    return (vis.filter(F.col("rn") == 1)
-            .withColumn("monotone_ok", F.coalesce(
-                F.col("version") >= F.lag("version").over(
-                    Window.partitionBy("obj").orderBy("q")),
-                F.lit(True)))
-            .select(F.col("q").cast("int").alias("snap_pct"),
-                    F.col("snap_ts").cast("long").alias("snap_ts"),
-                    "obj",
-                    F.col("version").cast("long")
-                    .alias("visible_version"),
-                    F.col("txn").cast("long").alias("writer_txn"),
-                    F.col("commit_ts").cast("long")
-                    .alias("writer_commit"),
-                    (F.col("commit_ts") <= F.col("snap_ts"))
-                    .alias("no_dirty_read"),
-                    (F.col("version") <= F.col("snap_ts"))
-                    .alias("no_future_version"),
-                    F.col("n_candidates").cast("long"),
-                    "monotone_ok"))
-
-
-_CLOSEST_PAIR_SQL = """
-WITH pts AS (
-  SELECT user_id AS id,
-         CAST(concat('0x', substr(md5('cpx:' || CAST(user_id AS VARCHAR)), 1, 5))
-              AS BIGINT) AS x,
-         CAST(concat('0x', substr(md5('cpy:' || CAST(user_id AS VARCHAR)), 1, 5))
-              AS BIGINT) AS y
-  FROM (SELECT DISTINCT user_id FROM events
-        ORDER BY user_id LIMIT 400)
-), brute AS (
-  SELECT min((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y))
-           AS bm,
-         count(*) AS n_total_pairs
-  FROM pts a JOIN pts b ON a.id < b.id
-), coarse AS (
-  SELECT min((a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y))
-           AS d0
-  FROM pts a JOIN pts b
-    ON a.id < b.id AND a.x // 65536 = b.x // 65536
-   AND a.y // 65536 = b.y // 65536
-), bound AS (
-  SELECT coalesce((SELECT d0 FROM coarse), (SELECT bm FROM brute))
-           AS d0,
-         (SELECT d0 FROM coarse) IS NOT NULL AS coarse_hit
-), cells AS (
-  SELECT p.*, b.d0,
-         CAST(floor(sqrt(CAST(greatest(b.d0, 1) AS DOUBLE))) AS BIGINT)
-           + 1 AS c
-  FROM pts p CROSS JOIN bound b
-), cand AS (
-  SELECT a.id AS ida, b.id AS idb,
-         (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS d2,
-         abs(a.x // a.c - b.x // b.c) <= 1
-           AND abs(a.y // a.c - b.y // b.c) <= 1 AS adjacent
-  FROM cells a JOIN cells b
-    ON a.id < b.id
-   AND abs(a.x // a.c - b.x // b.c) <= 1
-   AND abs(a.y // a.c - b.y // b.c) <= 1
-), win AS (
-  SELECT ida, idb, d2, adjacent,
-         row_number() OVER (ORDER BY d2, ida, idb) AS rn,
-         count(*) OVER () AS n_cand
-  FROM cand
-)
-SELECT CAST((SELECT count(*) FROM pts) AS BIGINT) AS n_points,
-       CAST(b.d0 AS BIGINT) AS coarse_bound_d2,
-       b.coarse_hit,
-       CAST((SELECT min(c) FROM cells) AS BIGINT) AS cell_size,
-       CAST(w.n_cand AS BIGINT) AS n_candidate_pairs,
-       CAST(br.n_total_pairs AS BIGINT) AS n_total_pairs,
-       w.n_cand <= br.n_total_pairs AS candidates_pruned,
-       CAST(w.ida AS BIGINT) AS pair_a, CAST(w.idb AS BIGINT) AS pair_b,
-       CAST(w.d2 AS BIGINT) AS grid_min_d2,
-       CAST(br.bm AS BIGINT) AS brute_min_d2,
-       w.d2 = br.bm AS grid_exact,
-       w.adjacent AS winner_adjacent
-FROM win w CROSS JOIN bound b CROSS JOIN brute br
-WHERE w.rn = 1
-"""
-
-
-@register("ann_closest_pair_grid", _CLOSEST_PAIR_SQL)
-def ann_closest_pair_grid(spark, sf_dir):
-    """Closest pair of points by grid blocking (the Rabin/Khuller-
-    Matias idea that makes closest-pair linear-time and, here, the
-    join-based form a distributed engine actually runs): 2-D points
-    are 20-bit md5-spread coordinates per user; a COARSE pass takes
-    the best within-cell distance d₀ on a fixed 16×16 grid (falling
-    back honestly to the global minimum when no coarse cell holds two
-    points — small corpora), then the FINE pass sets cell size
-    c = ⌊√d₀⌋+1 so any pair closer than d₀ must lie in 3×3-adjacent
-    cells, and only those candidate pairs are scored. Pinned: the
-    grid answer equals the brute-force minimum (grid_exact — the
-    correctness theorem of the blocking bound), the winning pair is
-    cell-adjacent (winner_adjacent), and the candidate count never
-    exceeds the all-pairs count (candidates_pruned; at real scale it
-    is orders of magnitude below n²/2 — the brute column here is the
-    test-scale oracle baseline, disclosed). All integer arithmetic:
-    squared distances < 2⁴¹ — exact in int64 in both engines; the
-    cell join is an equi-ish band join on cell ids, the shape that
-    shards across executors at 10⁹ points."""
-    ids = (_t(spark, sf_dir, "events").select("user_id").distinct()
-           .orderBy("user_id").limit(400))
-    pts = ids.select(
-        F.col("user_id").alias("id"),
-        F.conv(F.substring(F.md5(F.concat(
-            F.lit("cpx:"), F.col("user_id").cast("string"))), 1, 5),
-            16, 10).cast("long").alias("x"),
-        F.conv(F.substring(F.md5(F.concat(
-            F.lit("cpy:"), F.col("user_id").cast("string"))), 1, 5),
-            16, 10).cast("long").alias("y"))
-    a = pts.select(F.col("id").alias("ida"), F.col("x").alias("xa"),
-                   F.col("y").alias("ya"))
-    b = pts.select(F.col("id").alias("idb"), F.col("x").alias("xb"),
-                   F.col("y").alias("yb"))
-    d2 = ((F.col("xa") - F.col("xb")) * (F.col("xa") - F.col("xb"))
-          + (F.col("ya") - F.col("yb")) * (F.col("ya") - F.col("yb")))
-    brute = (a.join(b, F.col("ida") < F.col("idb"))
-             .agg(F.min(d2).alias("bm"),
-                  F.count(F.lit(1)).alias("n_total_pairs")))
-    coarse = (a.join(b, (F.col("ida") < F.col("idb"))
-                     & (F.expr("xa div 65536") == F.expr("xb div 65536"))
-                     & (F.expr("ya div 65536") == F.expr("yb div 65536")))
-              .agg(F.min(d2).alias("d0c")))
-    bound = (coarse.crossJoin(brute)
-             .select(F.coalesce("d0c", "bm").alias("d0"),
-                     F.col("d0c").isNotNull().alias("coarse_hit")))
-    cells = (pts.crossJoin(F.broadcast(bound))
-             .withColumn("c", F.floor(F.sqrt(
-                 F.greatest(F.col("d0"), F.lit(1)).cast("double")))
-                 .cast("long") + 1)
-             .withColumn("cx", F.expr("x div c"))
-             .withColumn("cy", F.expr("y div c")))
-    ca = cells.select(F.col("id").alias("ida"), F.col("x").alias("xa"),
-                      F.col("y").alias("ya"), F.col("cx").alias("cxa"),
-                      F.col("cy").alias("cya"))
-    cb = cells.select(F.col("id").alias("idb"), F.col("x").alias("xb"),
-                      F.col("y").alias("yb"), F.col("cx").alias("cxb"),
-                      F.col("cy").alias("cyb"))
-    cand = (ca.join(cb, (F.col("ida") < F.col("idb"))
-                    & (F.abs(F.col("cxa") - F.col("cxb")) <= 1)
-                    & (F.abs(F.col("cya") - F.col("cyb")) <= 1))
-            .select("ida", "idb", d2.alias("d2"),
-                    ((F.abs(F.col("cxa") - F.col("cxb")) <= 1)
-                     & (F.abs(F.col("cya") - F.col("cyb")) <= 1))
-                    .alias("adjacent")))
-    win = (cand.withColumn("rn", F.row_number().over(
-        Window.orderBy("d2", "ida", "idb")))
-        .withColumn("n_cand", F.count(F.lit(1)).over(
-            Window.partitionBy(F.lit(1)))))
-    npts = pts.agg(F.count(F.lit(1)).alias("n_points"))
-    csz = cells.agg(F.min("c").alias("cell_size"))
-    return (win.filter(F.col("rn") == 1)
-            .crossJoin(F.broadcast(bound))
-            .crossJoin(F.broadcast(brute))
-            .crossJoin(F.broadcast(npts))
-            .crossJoin(F.broadcast(csz))
-            .select(F.col("n_points").cast("long"),
-                    F.col("d0").cast("long").alias("coarse_bound_d2"),
-                    "coarse_hit",
-                    F.col("cell_size").cast("long"),
-                    F.col("n_cand").cast("long")
-                    .alias("n_candidate_pairs"),
-                    F.col("n_total_pairs").cast("long"),
-                    (F.col("n_cand") <= F.col("n_total_pairs"))
-                    .alias("candidates_pruned"),
-                    F.col("ida").cast("long").alias("pair_a"),
-                    F.col("idb").cast("long").alias("pair_b"),
-                    F.col("d2").cast("long").alias("grid_min_d2"),
-                    F.col("bm").cast("long").alias("brute_min_d2"),
-                    (F.col("d2") == F.col("bm")).alias("grid_exact"),
-                    F.col("adjacent").alias("winner_adjacent")))
-
-
-# The fixed 6-state redundant DFA for q_events_dfa_minimization:
-# state = 2·phase + parity, phase ∈ {0: no signup, 1: signup seen,
-# 2: accepted (signup→…→purchase), absorbing}, parity = click parity
-# (deliberately unobservable — acceptance ignores it and it never
-# feeds phase — so minimization MUST merge each parity twin pair).
-_DFA_NLETTERS = 5  # click=0 error=1 purchase=2 signup=3 view=4
-
-
-def _dfa_next(s: int, c: int) -> int:
-    p, b = divmod(s, 2)
-    if p == 0 and c == 3:
-        p = 1
-    elif p == 1 and c == 2:
-        p = 2
-    if c == 0:
-        b = 1 - b
-    return 2 * p + b
-
-
-_DFA_TRANS = [(s, c, _dfa_next(s, c))
-              for s in range(6) for c in range(_DFA_NLETTERS)]
-
-_DFA_SQL = f"""
-WITH RECURSIVE dfa(s, c, ns) AS (
-  SELECT * FROM (VALUES
-    {",".join(f"({s}, {c}, {ns})" for s, c, ns in _DFA_TRANS)}
-  ) AS t(s, c, ns)
-), acc(s, a) AS (
-  SELECT * FROM (VALUES (0, FALSE), (1, FALSE), (2, FALSE),
-                        (3, FALSE), (4, TRUE), (5, TRUE)) AS t(s, a)
-), d(s, t) AS (
-  SELECT a1.s, a2.s FROM acc a1, acc a2 WHERE a1.a <> a2.a
-  UNION
-  SELECT ts.s, tt.s
-  FROM d JOIN dfa ts ON ts.ns = d.s
-         JOIN dfa tt ON tt.ns = d.t AND tt.c = ts.c
-), states(s) AS (
-  SELECT * FROM (VALUES (0), (1), (2), (3), (4), (5)) AS t(s)
-), eq AS (
-  SELECT s1.s AS s, s2.s AS t
-  FROM states s1, states s2
-  WHERE NOT EXISTS (SELECT 1 FROM d
-                    WHERE d.s = s1.s AND d.t = s2.s)
-), cls AS (
-  SELECT s, min(t) AS class_id, count(*) AS class_size
-  FROM eq GROUP BY s
-), ncls AS (
-  SELECT count(DISTINCT class_id) AS n_classes FROM cls
-), seqs AS (
-  SELECT user_id,
-         list(CASE event_type WHEN 'click' THEN 0 WHEN 'error' THEN 1
-              WHEN 'purchase' THEN 2 WHEN 'signup' THEN 3 ELSE 4 END
-              ORDER BY ts, event_id) AS cs
-  FROM events GROUP BY user_id
-), runs AS (
-  SELECT user_id, list_reduce(list_prepend(0, cs), (s, c) ->
-    2 * (CASE WHEN s // 2 = 0 AND c = 3 THEN 1
-              WHEN s // 2 = 1 AND c = 2 THEN 2 ELSE s // 2 END)
-    + (CASE WHEN c = 0 THEN 1 - (s % 2) ELSE s % 2 END)) AS fs
-  FROM seqs
-), lang AS (
-  SELECT count(*) AS n_users,
-         sum(CASE WHEN a.a THEN 1 ELSE 0 END) AS n_accept_orig,
-         sum(CASE WHEN am.a THEN 1 ELSE 0 END) AS n_accept_min,
-         bool_and(a.a = am.a) AS language_preserved
-  FROM runs r
-  JOIN acc a ON a.s = r.fs
-  JOIN cls c ON c.s = r.fs
-  JOIN acc am ON am.s = c.class_id
-)
-SELECT CAST(st.s AS INTEGER) AS state,
-       CAST(st.s // 2 AS INTEGER) AS phase,
-       CAST(st.s % 2 AS INTEGER) AS parity,
-       a.a AS accepting,
-       CAST(c.class_id AS INTEGER) AS class_id,
-       CAST(c.class_size AS INTEGER) AS class_size,
-       EXISTS (SELECT 1 FROM eq
-               WHERE eq.s = st.s
-                 AND eq.t = 2 * (st.s // 2) + 1 - (st.s % 2))
-         AS merged_with_twin,
-       CAST(n.n_classes AS INTEGER) AS n_classes,
-       CAST(l.n_users AS BIGINT) AS n_users,
-       CAST(l.n_accept_orig AS BIGINT) AS n_accept_orig,
-       CAST(l.n_accept_min AS BIGINT) AS n_accept_min,
-       l.language_preserved
-FROM states st JOIN acc a ON a.s = st.s JOIN cls c ON c.s = st.s
-CROSS JOIN ncls n CROSS JOIN lang l
-"""
-
-
-@register("q_events_dfa_minimization", _DFA_SQL)
-def q_events_dfa_minimization(spark, sf_dir):
-    """DFA minimization, two classical algorithms forced to agree: the
-    ENGINE minimizes a deliberately redundant 6-state automaton
-    (accepts sessions containing a signup later followed by a
-    purchase, while dragging along an unobservable click-parity bit)
-    by MOORE SIGNATURE REFINEMENT — iterate class signatures
-    (class, class∘δ per letter) to fixpoint — and the ORACLE by the
-    TABLE-FILLING algorithm (recursive-CTE fixpoint marking
-    distinguishable pairs: acceptance-differing pairs, then any pair
-    some letter maps into a marked pair), so gate hash-equality is a
-    machine-checked proof the two minimization procedures find the
-    same Myhill-Nerode classes (each parity twin merged, 3 classes).
-    The data-sized half is the LANGUAGE check over every user's real
-    event sequence: the engine folds BOTH the original automaton and
-    its derived quotient automaton (transitions computed from the
-    refinement, well-definedness asserted) through a JVM `aggregate`
-    expression over the per-user letter arrays — no UDF, no replay —
-    while the oracle folds the original via list_reduce and projects
-    through the class map; language_preserved pins acceptance-
-    equality on every user, the quotient-automaton theorem on real
-    strings. Per-user fold is the partition-parallel shape of running
-    a scanner over 10⁹ documents."""
-    acc = {s: s // 2 == 2 for s in range(6)}
-    cls = {s: int(acc[s]) for s in range(6)}
-    while True:
-        sig = {s: (cls[s], tuple(cls[_dfa_next(s, c)]
-                                 for c in range(_DFA_NLETTERS)))
-               for s in range(6)}
-        uniq = {v: i for i, v in enumerate(sorted(set(sig.values())))}
-        new = {s: uniq[sig[s]] for s in range(6)}
-        if new == cls:
-            break
-        cls = new
-    members: dict = {}
-    for s in range(6):
-        members.setdefault(cls[s], []).append(s)
-    rep = {k: min(v) for k, v in members.items()}
-    class_id = {s: rep[cls[s]] for s in range(6)}
-    class_size = {s: len(members[cls[s]]) for s in range(6)}
-    dmin = {}
-    for k, mem in members.items():
-        for c in range(_DFA_NLETTERS):
-            nxt = {class_id[_dfa_next(m, c)] for m in mem}
-            assert len(nxt) == 1, "merged distinguishable states"
-            dmin[(rep[k], c)] = nxt.pop()
-    acc_classes = sorted({class_id[s] for s in range(6) if acc[s]})
-    n_classes = len(members)
-
-    code = ("CASE event_type WHEN 'click' THEN 0 WHEN 'error' THEN 1 "
-            "WHEN 'purchase' THEN 2 WHEN 'signup' THEN 3 ELSE 4 END")
-    seqs = (_t(spark, sf_dir, "events")
-            .select("user_id", "ts", "event_id",
-                    F.expr(code).alias("c"))
-            .groupBy("user_id")
-            .agg(F.expr("transform(array_sort(collect_list("
-                        "struct(ts, event_id, c))), x -> x.c)")
-                 .alias("cs")))
-    orig_next = (
-        "2 * (CASE WHEN s div 2 = 0 AND c = 3 THEN 1"
-        " WHEN s div 2 = 1 AND c = 2 THEN 2 ELSE s div 2 END)"
-        " + (CASE WHEN c = 0 THEN 1 - (s % 2) ELSE s % 2 END)")
-    min_next = "CASE " + " ".join(
-        f"WHEN s = {st} AND c = {c} THEN {ns}"
-        for (st, c), ns in sorted(dmin.items())) + " ELSE s END"
-    runs = seqs.select(
-        F.expr(f"aggregate(cs, 0, (s, c) -> CAST(({orig_next}) AS INT))")
-        .alias("fo"),
-        F.expr(f"aggregate(cs, {class_id[0]},"
-               f" (s, c) -> CAST(({min_next}) AS INT))")
-        .alias("fm"))
-    accm = F.col("fm").isin(acc_classes)
-    lang = runs.agg(
-        F.count(F.lit(1)).alias("n_users"),
-        F.sum(F.expr("CASE WHEN fo div 2 = 2 THEN 1 ELSE 0 END"))
-        .alias("n_accept_orig"),
-        F.sum(F.when(accm, 1).otherwise(0)).alias("n_accept_min"),
-        F.min(F.expr("fo div 2 = 2") == accm)
-        .alias("language_preserved"))
-    srows = [(s, s // 2, s % 2, acc[s], class_id[s], class_size[s],
-              class_id[s] == class_id[2 * (s // 2) + 1 - (s % 2)],
-              n_classes) for s in range(6)]
-    sdf = spark.createDataFrame(
-        srows, "state int, phase int, parity int, accepting boolean,"
-               " class_id int, class_size int,"
-               " merged_with_twin boolean, n_classes int")
-    return (sdf.crossJoin(F.broadcast(lang))
-            .select("state", "phase", "parity", "accepting",
-                    "class_id", "class_size", "merged_with_twin",
-                    "n_classes",
-                    F.col("n_users").cast("long"),
-                    F.col("n_accept_orig").cast("long"),
-                    F.col("n_accept_min").cast("long"),
-                    "language_preserved"))
-
-
-_ARIES_SQL = """
-WITH o AS (
-  SELECT val, i FROM (
-    SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS val,
-           row_number() OVER (ORDER BY o_orderkey) AS i
-    FROM orders) t WHERE i <= 16
-), fp AS (
-  SELECT 5 + CAST(concat('0x', substr(md5('aries:'
-           || CAST(CAST(sum(val) AS BIGINT) AS VARCHAR)), 1, 8))
-           AS BIGINT) % 14 AS c
-  FROM o
-), upd AS (
-  SELECT i, val,
-         2 * ((i - 1) // 8) + ((i - 1) % 8) % 2 AS txn,
-         ((i - 1) % 8) // 2 AS seq,
-         10 * ((i - 1) // 8) + (i - 1) % 8 + 1 AS lsn,
-         2 * (2 * ((i - 1) // 8) + ((i - 1) % 8) % 2)
-           + (((i - 1) % 8) // 2) % 2 AS page,
-         CASE WHEN ((i - 1) % 8) % 2 = 0
-              THEN 10 * ((i - 1) // 8) + 9
-              ELSE 10 * ((i - 1) // 8) + 10 END AS commit_lsn
-  FROM o
-), logd AS (
-  SELECT u.* FROM upd u, fp WHERE u.lsn <= fp.c
-), tstat AS (
-  SELECT txn,
-         CASE WHEN commit_lsn <= (SELECT c FROM fp)
-              THEN 'winner' ELSE 'loser' END AS status
-  FROM (SELECT DISTINCT txn, commit_lsn FROM logd)
-), undo AS (
-  SELECT l.page, l.lsn,
-         (SELECT c FROM fp)
-           + row_number() OVER (ORDER BY l.lsn DESC) AS clr_lsn
-  FROM logd l JOIN tstat t ON t.txn = l.txn
-  WHERE t.status = 'loser'
-), pages AS (
-  SELECT CAST(unnest(range(0, 8)) AS BIGINT) AS page
-), gstat AS (
-  SELECT (SELECT count(*) FROM tstat WHERE status = 'winner')
-           AS n_winners,
-         (SELECT count(*) FROM tstat WHERE status = 'loser')
-           AS n_losers,
-         (SELECT count(*) FROM undo) AS n_clrs
-), pg AS (
-  SELECT p.page, p.page // 2 AS owner_txn,
-         coalesce(t.status, 'unstarted') AS txn_status,
-         (SELECT count(*) FROM logd l WHERE l.page = p.page)
-           AS n_logged,
-         (SELECT count(*) FROM undo u WHERE u.page = p.page)
-           AS n_undone,
-         coalesce((SELECT max_by(l.val, l.lsn) FROM logd l
-                   JOIN tstat w ON w.txn = l.txn
-                     AND w.status = 'winner'
-                   WHERE l.page = p.page), 0) AS winner_replay_value,
-         CASE coalesce(t.status, 'unstarted')
-           WHEN 'winner' THEN coalesce(
-             (SELECT max_by(l.val, l.lsn) FROM logd l
-              WHERE l.page = p.page), 0)
-           ELSE 0 END AS final_value,
-         CASE coalesce(t.status, 'unstarted')
-           WHEN 'winner' THEN coalesce(
-             (SELECT max(l.lsn) FROM logd l WHERE l.page = p.page), 0)
-           WHEN 'loser' THEN coalesce(
-             (SELECT max(u.clr_lsn) FROM undo u
-              WHERE u.page = p.page), 0)
-           ELSE 0 END AS final_pagelsn
-  FROM pages p LEFT JOIN tstat t ON t.txn = p.page // 2
-)
-SELECT CAST(pg.page AS INTEGER) AS page,
-       CAST(pg.owner_txn AS INTEGER) AS owner_txn,
-       pg.txn_status,
-       CAST(pg.n_logged AS BIGINT) AS n_logged,
-       CAST(pg.n_logged AS BIGINT) AS n_redone,
-       CAST(pg.n_undone AS BIGINT) AS n_undone,
-       CAST(pg.final_value AS BIGINT) AS final_value,
-       CAST(pg.winner_replay_value AS BIGINT) AS winner_replay_value,
-       pg.final_value = pg.winner_replay_value AS aries_correct,
-       CAST(pg.final_pagelsn AS BIGINT) AS final_pagelsn,
-       CAST((SELECT count(*) FROM logd l
-             WHERE l.page = pg.page AND l.lsn > pg.final_pagelsn)
-            AS BIGINT) AS n_second_redo_writes,
-       (SELECT count(*) FROM logd l
-        WHERE l.page = pg.page AND l.lsn > pg.final_pagelsn) = 0
-         AS redo_idempotent,
-       CAST((SELECT c FROM fp) AS INTEGER) AS crash_lsn,
-       CAST(g.n_winners AS INTEGER) AS n_winners,
-       CAST(g.n_losers AS INTEGER) AS n_losers,
-       CAST(g.n_clrs AS INTEGER) AS n_clrs
-FROM pg CROSS JOIN gstat g
-"""
-
-
-@register("q_orders_aries_recovery", _ARIES_SQL)
-def q_orders_aries_recovery(spark, sf_dir):
-    """ARIES crash recovery (Mohan 1992 — the redo/undo protocol inside
-    DB2, SQL Server, InnoDB) replayed over a WAL built from real order
-    data: 16 update records in two interleaved transaction pairs (each
-    block alternates its two txns' updates across their two private
-    pages, commit records at the block's end — strict-2PL surrogate:
-    page ownership is disjoint, disclosed), crash LSN md5-derived from
-    the logged cents themselves, so winners/losers are data-dependent.
-    Recovery is computed set-at-a-time (no replay loop in EITHER
-    engine — windows and conditional aggregates express analysis,
-    repeating-history redo, and reverse-order undo with CLR LSNs
-    allocated past the crash point): ATT losers are undone to their
-    before-image chain (initial 0 under single ownership), winners
-    keep their last redone value. The ARIES correctness theorem is
-    pinned per page — recovered state equals replaying ONLY committed
-    transactions (aries_correct) — and redo idempotence is pinned via
-    the pageLSN protocol: after recovery NO logged record has
-    LSN > pageLSN, so a second redo pass writes nothing
-    (redo_idempotent, n_second_redo_writes = 0)."""
-    o = (_t(spark, sf_dir, "orders")
-         .select(F.round(F.col("o_totalprice") * 100).cast("long")
-                 .alias("val"),
-                 F.row_number().over(Window.orderBy("o_orderkey"))
-                 .alias("i"))
-         .filter(F.col("i") <= 16))
-    fp = o.agg((F.lit(5) + F.conv(F.substring(F.md5(F.concat(
-        F.lit("aries:"),
-        F.sum("val").cast("long").cast("string"))), 1, 8), 16, 10)
-        .cast("long") % 14).alias("c"))
-    upd = o.select(
-        "i", "val",
-        (2 * F.expr("(i - 1) div 8") + F.expr("(i - 1) % 8") % 2)
-        .alias("txn"),
-        F.expr("((i - 1) % 8) div 2").alias("seq"),
-        (10 * F.expr("(i - 1) div 8") + F.expr("(i - 1) % 8") + 1)
-        .alias("lsn"))
-    upd = (upd.withColumn("page", 2 * F.col("txn") + F.col("seq") % 2)
-           .withColumn("commit_lsn", F.when(
-               F.col("txn") % 2 == 0,
-               10 * F.expr("(i - 1) div 8") + 9)
-               .otherwise(10 * F.expr("(i - 1) div 8") + 10)))
-    logd = (upd.crossJoin(F.broadcast(fp))
-            .filter(F.col("lsn") <= F.col("c")))
-    tstat = (logd.select("txn", "commit_lsn", "c").distinct()
-             .select("txn", F.when(F.col("commit_lsn") <= F.col("c"),
-                                   "winner").otherwise("loser")
-                     .alias("status")))
-    undo = (logd.join(tstat, "txn")
-            .filter(F.col("status") == "loser")
-            .withColumn("clr_lsn", F.col("c") + F.row_number().over(
-                Window.orderBy(F.desc("lsn"))))
-            .select("page", "lsn", "clr_lsn"))
-    glob = (tstat.agg(
-        F.sum(F.when(F.col("status") == "winner", 1).otherwise(0))
-        .alias("n_winners"),
-        F.sum(F.when(F.col("status") == "loser", 1).otherwise(0))
-        .alias("n_losers"))
-        .crossJoin(undo.agg(F.count(F.lit(1)).alias("n_clrs"))))
-    pages = spark.range(8).select(F.col("id").alias("page"))
-    per_page_log = logd.groupBy("page").agg(
-        F.count(F.lit(1)).alias("n_logged"),
-        F.max("lsn").alias("max_lsn"),
-        F.max_by("val", "lsn").alias("last_val"))
-    per_page_win = (logd.join(tstat, "txn")
-                    .filter(F.col("status") == "winner")
-                    .groupBy("page").agg(
-                        F.max_by("val", "lsn").alias("win_val")))
-    per_page_undo = undo.groupBy("page").agg(
-        F.count(F.lit(1)).alias("n_undone"),
-        F.max("clr_lsn").alias("max_clr"))
-    owner_stat = tstat.select(F.col("txn").alias("owner_txn"),
-                              "status")
-    pg = (pages.withColumn("owner_txn", F.expr("page div 2"))
-          .join(owner_stat, "owner_txn", "left")
-          .join(per_page_log, "page", "left")
-          .join(per_page_win, "page", "left")
-          .join(per_page_undo, "page", "left")
-          .withColumn("txn_status",
-                      F.coalesce("status", F.lit("unstarted")))
-          .withColumn("n_logged", F.coalesce("n_logged", F.lit(0)))
-          .withColumn("n_undone", F.coalesce("n_undone", F.lit(0)))
-          .withColumn("winner_replay_value",
-                      F.coalesce("win_val", F.lit(0)))
-          .withColumn("final_value", F.when(
-              F.col("txn_status") == "winner",
-              F.coalesce("last_val", F.lit(0))).otherwise(0))
-          .withColumn("final_pagelsn", F.when(
-              F.col("txn_status") == "winner",
-              F.coalesce("max_lsn", F.lit(0)))
-              .when(F.col("txn_status") == "loser",
-                    F.coalesce("max_clr", F.lit(0)))
-              .otherwise(0)))
-    second = (logd.select("page", "lsn")
-              .join(pg.select("page", "final_pagelsn"), "page")
-              .filter(F.col("lsn") > F.col("final_pagelsn"))
-              .groupBy("page").agg(F.count(F.lit(1)).alias("n2")))
-    return (pg.join(second, "page", "left")
-            .withColumn("n_second_redo_writes",
-                        F.coalesce("n2", F.lit(0)))
-            .crossJoin(F.broadcast(glob))
-            .crossJoin(F.broadcast(fp))
-            .select(F.col("page").cast("int").alias("page"),
-                    F.col("owner_txn").cast("int"),
-                    "txn_status",
-                    F.col("n_logged").cast("long"),
-                    F.col("n_logged").cast("long").alias("n_redone"),
-                    F.col("n_undone").cast("long"),
-                    F.col("final_value").cast("long"),
-                    F.col("winner_replay_value").cast("long"),
-                    (F.col("final_value")
-                     == F.col("winner_replay_value"))
-                    .alias("aries_correct"),
-                    F.col("final_pagelsn").cast("long"),
-                    F.col("n_second_redo_writes").cast("long"),
-                    (F.col("n_second_redo_writes") == 0)
-                    .alias("redo_idempotent"),
-                    F.col("c").cast("int").alias("crash_lsn"),
-                    F.col("n_winners").cast("int"),
-                    F.col("n_losers").cast("int"),
-                    F.col("n_clrs").cast("int")))
-
-
-_CANON_HUFF_SQL = _HUFF_CORE + """
-, lens AS (
-  SELECT v.w, v.c, CAST(f.depths[v.i] AS BIGINT) AS l
-  FROM voc v, fin f
-), mxl AS (
-  SELECT max(l) AS maxl FROM lens
-), hist AS (
-  SELECT l, count(*) AS cnt FROM lens GROUP BY l
-), base AS (
-  SELECT d.l,
-         coalesce(sum(h.cnt * (CAST(1 AS BIGINT)
-                  << CAST(d.l - h.l AS INTEGER))), 0) AS start_code
-  FROM (SELECT DISTINCT l FROM lens) d
-  LEFT JOIN hist h ON h.l < d.l
-  GROUP BY d.l
-), codes AS (
-  SELECT le.w, le.c, le.l,
-         b.start_code
-           + row_number() OVER (PARTITION BY le.l ORDER BY le.w) - 1
-           AS code
-  FROM lens le JOIN base b ON b.l = le.l
-), iv AS (
-  SELECT c.w, c.c, c.l, c.code, m.maxl,
-         c.code << CAST(m.maxl - c.l AS INTEGER) AS iv_start,
-         (c.code + 1) << CAST(m.maxl - c.l AS INTEGER) AS iv_end
-  FROM codes c CROSS JOIN mxl m
-), tile AS (
-  SELECT iv.*,
-         coalesce(lag(iv_end) OVER (ORDER BY iv_start), 0)
-           AS prev_end,
-         count(*) OVER () AS vsz,
-         max(iv_end) OVER () AS max_end
-  FROM iv
-)
-SELECT w AS word, CAST(c AS BIGINT) AS freq,
-       CAST(l AS INTEGER) AS code_len,
-       CAST(code AS BIGINT) AS code,
-       lpad(bin(CAST(code AS BIGINT)), CAST(l AS INTEGER), '0')
-         AS code_bits,
-       CAST(iv_start AS BIGINT) AS iv_start,
-       CAST(iv_end AS BIGINT) AS iv_end,
-       iv_start = prev_end AS tiles_ok,
-       max_end = (CAST(1 AS BIGINT) << CAST(maxl AS INTEGER))
-         AS complete_ok,
-       CAST(maxl AS INTEGER) AS max_len,
-       CAST(vsz AS INTEGER) AS vocab_size
-FROM tile
-"""
-
-
-@register("text_canonical_huffman", _CANON_HUFF_SQL)
-def text_canonical_huffman(spark, sf_dir):
-    """Canonical Huffman code assignment (the form every real decoder
-    — DEFLATE, JPEG, Zstandard FSE headers — actually ships, because
-    lengths alone reconstruct the codebook): from the same tie-broken
-    Huffman lengths as text_huffman_lengths, each symbol's code value
-    falls out in CLOSED FORM — code(s) = Σ_{l<l_s} cnt(l)·2^(l_s−l) +
-    rank-within-length — one length histogram, one conditional join,
-    one window; no tree walk, no sequential next-code scan, fully
-    distributed over the vocabulary. Prefix-freeness AND completeness
-    are pinned together by the interval-tiling theorem: left-justified
-    to L = max length, the code intervals [code·2^(L−l), (code+1)·
-    2^(L−l)) of a canonical prefix code tile [0, 2^L) exactly — one
-    lag window checks every boundary (tiles_ok) and the global end
-    pins 2^L (complete_ok); any collision, gap or Kraft slip breaks a
-    boundary. Engine: driver merge loop for lengths (the
-    vocabulary-bounded BPE discipline) + distributed canonical
-    assignment; oracle: the list-state merge recursion + the same
-    closed form."""
-    d = _t(spark, sf_dir, "documents")
-    wc = (d.select(F.explode(F.split("text", " ")).alias("w"))
-          .filter(F.col("w") != "")
-          .groupBy("w").agg(F.count(F.lit(1)).cast("long").alias("c"))
-          .orderBy("w").collect())
-    words = [r["w"] for r in wc]
-    freqs = [int(r["c"]) for r in wc]
-    depths = _huffman_depths(freqs)
-    maxl = max(depths)
-    assert maxl <= 62, "code intervals would overflow int64"
-    lens = spark.createDataFrame(
-        list(zip(words, freqs, [int(x) for x in depths])),
-        "w string, c long, l long")
-    hist = lens.groupBy("l").agg(F.count(F.lit(1)).alias("cnt"))
-    base = (hist.select(F.col("l").alias("dl")).distinct()
-            .join(hist.select(F.col("l").alias("hl"), "cnt"),
-                  F.col("hl") < F.col("dl"), "left")
-            .groupBy("dl")
-            .agg(F.coalesce(F.sum(F.expr(
-                "cnt * shiftleft(CAST(1 AS BIGINT),"
-                " CAST(dl - hl AS INT))")), F.lit(0))
-                .alias("start_code")))
-    codes = (lens.join(base, lens.l == base.dl)
-             .withColumn("code", F.col("start_code")
-                         + F.row_number().over(
-                             Window.partitionBy("l").orderBy("w")) - 1))
-    iv = (codes
-          .withColumn("iv_start",
-                      F.expr(f"shiftleft(code, CAST({maxl} - l AS INT))"))
-          .withColumn("iv_end", F.expr(
-              f"shiftleft(code + 1, CAST({maxl} - l AS INT))")))
-    tile = (iv.withColumn("prev_end", F.coalesce(
-        F.lag("iv_end").over(Window.orderBy("iv_start")), F.lit(0)))
-        .withColumn("vsz", F.count(F.lit(1)).over(
-            Window.partitionBy(F.lit(1))))
-        .withColumn("max_end", F.max("iv_end").over(
-            Window.partitionBy(F.lit(1)))))
-    return tile.select(
-        F.col("w").alias("word"), F.col("c").cast("long").alias("freq"),
-        F.col("l").cast("int").alias("code_len"),
-        F.col("code").cast("long").alias("code"),
-        F.expr("lpad(bin(code), CAST(l AS INT), '0')")
-        .alias("code_bits"),
-        F.col("iv_start").cast("long"), F.col("iv_end").cast("long"),
-        (F.col("iv_start") == F.col("prev_end")).alias("tiles_ok"),
-        (F.col("max_end") == F.lit(1 << maxl)).alias("complete_ok"),
-        F.lit(maxl).cast("int").alias("max_len"),
-        F.col("vsz").cast("int").alias("vocab_size"))
-
-
-_VCLOCK_SQL = """
-WITH RECURSIVE procs AS (
-  SELECT user_id, row_number() OVER (ORDER BY user_id) AS pr
-  FROM (SELECT DISTINCT user_id FROM events ORDER BY user_id LIMIT 4)
-), evs AS (
-  SELECT e.event_id, p.pr AS proc, e.ts, e.event_type,
-         row_number() OVER (PARTITION BY p.pr
-                            ORDER BY e.ts, e.event_id) AS idx
-  FROM events e JOIN procs p ON p.user_id = e.user_id
-  QUALIFY idx <= 6
-), g AS (
-  SELECT *, row_number() OVER (ORDER BY ts, event_id) AS grn FROM evs
-), po AS (
-  SELECT a.event_id AS src, b.event_id AS dst
-  FROM g a JOIN g b ON b.proc = a.proc AND b.idx = a.idx + 1
-), msg AS (
-  SELECT a.event_id AS src,
-         (SELECT b.event_id FROM g b
-          WHERE b.grn > a.grn AND b.proc <> a.proc
-          ORDER BY b.grn LIMIT 1) AS dst
-  FROM g a WHERE a.event_type IN ('purchase', 'signup')
-), edges AS (
-  SELECT src, dst FROM po
-  UNION SELECT src, dst FROM msg WHERE dst IS NOT NULL
-), hb(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT hb.src, e.dst FROM hb JOIN edges e ON e.src = hb.dst
-), vc AS (
-  SELECT e.event_id, pp.pr,
-         (SELECT count(*) FROM g f
-          WHERE f.proc = pp.pr AND (f.event_id = e.event_id
-            OR EXISTS (SELECT 1 FROM hb
-                       WHERE hb.src = f.event_id
-                         AND hb.dst = e.event_id))) AS cnt
-  FROM g e CROSS JOIN (SELECT DISTINCT pr FROM procs) pp
-), vcs AS (
-  SELECT event_id,
-         max(CASE WHEN pr = 1 THEN cnt END) AS v1,
-         max(CASE WHEN pr = 2 THEN cnt END) AS v2,
-         max(CASE WHEN pr = 3 THEN cnt END) AS v3,
-         max(CASE WHEN pr = 4 THEN cnt END) AS v4
-  FROM vc GROUP BY event_id
-), pairs AS (
-  SELECT a.event_id AS ea, b.event_id AS eb,
-         EXISTS (SELECT 1 FROM hb
-                 WHERE src = a.event_id AND dst = b.event_id) AS hbab,
-         va.v1 <= vb.v1 AND va.v2 <= vb.v2 AND va.v3 <= vb.v3
-           AND va.v4 <= vb.v4
-           AND (va.v1 < vb.v1 OR va.v2 < vb.v2 OR va.v3 < vb.v3
-                OR va.v4 < vb.v4) AS vclt
-  FROM g a JOIN g b ON a.event_id <> b.event_id
-  JOIN vcs va ON va.event_id = a.event_id
-  JOIN vcs vb ON vb.event_id = b.event_id
-), thm AS (
-  SELECT bool_and(hbab = vclt) AS theorem_ok,
-         sum(CASE WHEN ea < eb AND NOT hbab AND NOT EXISTS (
-               SELECT 1 FROM pairs p2
-               WHERE p2.ea = pairs.eb AND p2.eb = pairs.ea
-                 AND p2.hbab) THEN 1 ELSE 0 END) AS n_concurrent
-  FROM pairs
-), nm AS (
-  SELECT count(*) AS n_msgs FROM msg WHERE dst IS NOT NULL
-)
-SELECT CAST(g.event_id AS BIGINT) AS event_id,
-       CAST(g.proc AS INTEGER) AS proc,
-       CAST(g.idx AS INTEGER) AS idx,
-       CAST(v.v1 AS INTEGER) AS v1, CAST(v.v2 AS INTEGER) AS v2,
-       CAST(v.v3 AS INTEGER) AS v3, CAST(v.v4 AS INTEGER) AS v4,
-       (CASE g.proc WHEN 1 THEN v.v1 WHEN 2 THEN v.v2
-                    WHEN 3 THEN v.v3 ELSE v.v4 END) = g.idx
-         AS own_component_ok,
-       t.theorem_ok,
-       CAST(t.n_concurrent AS BIGINT) AS n_concurrent_pairs,
-       CAST(n.n_msgs AS INTEGER) AS n_msgs
-FROM g JOIN vcs v ON v.event_id = g.event_id
-CROSS JOIN thm t CROSS JOIN nm n
-"""
-
-
-@register("q_events_vector_clocks", _VCLOCK_SQL)
-def q_events_vector_clocks(spark, sf_dir):
-    """Vector clocks with the Fidge-Mattern characterization theorem
-    machine-checked: four processes (lowest user ids), six local steps
-    each in (ts, event_id) order, and message edges derived from the
-    data — every purchase/signup event 'sends' to the next event of a
-    different process in global order. Happens-before is the closure
-    of program order plus messages; each event's vector clock falls
-    out of the CLOSED FORM VC(e)[p] = #{events of p that happen-before
-    -or-equal e} (no clock-propagation replay — the counting
-    definition IS the fixed point the update rule computes). Pinned
-    over ALL ordered event pairs: e → f iff VC(e) < VC(f)
-    componentwise — the theorem vector clocks exist for — plus the
-    own-component identity VC(e)[proc(e)] = local index, with the
-    concurrent-pair count (incomparable clocks) emitted. Engine:
-    bounded driver replay on the 24 collected events (2-SAT
-    discipline); oracle: recursive-CTE closure + correlated counts."""
-    rows = (_t(spark, sf_dir, "events")
-            .select("event_id", "ts", "user_id", "event_type")
-            .collect())
-    users = sorted({r["user_id"] for r in rows})[:4]
-    pr = {u: i + 1 for i, u in enumerate(users)}
-    mine = sorted((r for r in rows if r["user_id"] in pr),
-                  key=lambda r: (r["ts"], r["event_id"]))
-    by_proc: dict = {}
-    evs = []
-    for r in mine:
-        p = pr[r["user_id"]]
-        by_proc.setdefault(p, [])
-        if len(by_proc[p]) < 6:
-            by_proc[p].append(r)
-            evs.append((r["event_id"], p, len(by_proc[p]),
-                        r["event_type"]))
-    order = {e[0]: i for i, e in enumerate(evs)}  # global rank
-    edges = set()
-    for p, lst in by_proc.items():
-        for a, b in zip(lst, lst[1:]):
-            edges.add((a["event_id"], b["event_id"]))
-    n_msgs = 0
-    for (eid, p, idx, et) in evs:
-        if et in ("purchase", "signup"):
-            nxt = [e for e in evs
-                   if order[e[0]] > order[eid] and e[1] != p]
-            if nxt:
-                edges.add((eid, min(nxt, key=lambda e: order[e[0]])[0]))
-                n_msgs += 1
-    hb = set(edges)
-    while True:
-        new = hb | {(a, d) for (a, b) in hb for (c, d) in edges
-                    if b == c}
-        if new == hb:
-            break
-        hb = new
-    vc = {}
-    for (eid, p, idx, _) in evs:
-        vc[eid] = [sum(1 for (fid, fp, _, _) in evs if fp == q
-                       and (fid == eid or (fid, eid) in hb))
-                   for q in (1, 2, 3, 4)]
-    theorem_ok = True
-    n_conc = 0
-    for (ea, _, _, _) in evs:
-        for (eb, _, _, _) in evs:
-            if ea == eb:
-                continue
-            hbab = (ea, eb) in hb
-            vclt = (all(x <= y for x, y in zip(vc[ea], vc[eb]))
-                    and vc[ea] != vc[eb])
-            theorem_ok = theorem_ok and (hbab == vclt)
-            if ea < eb and not hbab and (eb, ea) not in hb:
-                n_conc += 1
-    out = [(eid, p, idx, vc[eid][0], vc[eid][1], vc[eid][2],
-            vc[eid][3], vc[eid][p - 1] == idx, theorem_ok,
-            n_conc, n_msgs)
-           for (eid, p, idx, _) in evs]
-    return spark.createDataFrame(
-        out, "event_id long, proc int, idx int, v1 int, v2 int,"
-             " v3 int, v4 int, own_component_ok boolean,"
-             " theorem_ok boolean, n_concurrent_pairs long,"
-             " n_msgs int")
-
-
-_STERN_BROCOT_SQL = """
-WITH RECURSIVE s AS (
-  SELECT CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
-              AS BIGINT) AS tot,
-         count(*) AS n
-  FROM orders
-), frac AS (
-  SELECT tot % n AS a, n AS b, tot // n AS int_part FROM s
-), walk(step, lop, loq, hip, hiq, medp, medq, dir) AS (
-  SELECT 0, CAST(0 AS BIGINT), CAST(1 AS BIGINT),
-         CAST(1 AS BIGINT), CAST(1 AS BIGINT),
-         CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-         CAST(NULL AS VARCHAR)
-  UNION ALL
-  SELECT w.step + 1,
-         CASE WHEN (w.lop + w.hip) * f.b < f.a * (w.loq + w.hiq)
-              THEN w.lop + w.hip ELSE w.lop END,
-         CASE WHEN (w.lop + w.hip) * f.b < f.a * (w.loq + w.hiq)
-              THEN w.loq + w.hiq ELSE w.loq END,
-         CASE WHEN (w.lop + w.hip) * f.b < f.a * (w.loq + w.hiq)
-              THEN w.hip ELSE w.lop + w.hip END,
-         CASE WHEN (w.lop + w.hip) * f.b < f.a * (w.loq + w.hiq)
-              THEN w.hiq ELSE w.loq + w.hiq END,
-         w.lop + w.hip, w.loq + w.hiq,
-         CASE WHEN (w.lop + w.hip) * f.b = f.a * (w.loq + w.hiq)
-              THEN 'hit'
-              WHEN (w.lop + w.hip) * f.b < f.a * (w.loq + w.hiq)
-              THEN 'right' ELSE 'left' END
-  FROM walk w, frac f
-  WHERE w.loq + w.hiq <= 50
-    AND NOT (w.step > 0 AND w.dir = 'hit')
-), cand AS (
-  SELECT w.medp AS p, w.medq AS q FROM walk w WHERE w.step > 0
-  UNION
-  SELECT w.lop, w.loq FROM walk w WHERE w.step > 0
-  UNION
-  SELECT w.hip, w.hiq FROM walk w
-  WHERE w.step > 0 AND w.hiq >= 1 AND w.hip <= w.hiq
-), best AS (
-  SELECT c.p, c.q,
-         abs(f.a * c.q - c.p * f.b) * 1000000 // (f.b * c.q)
-           AS err_e6_floor,
-         row_number() OVER (ORDER BY
-           abs(f.a * c.q - c.p * f.b) * 1.0 / (f.b * c.q), c.q, c.p)
-           AS rn
-  FROM cand c, frac f WHERE c.q BETWEEN 1 AND 50
-), exh AS (
-  SELECT q, p,
-         abs((SELECT a FROM frac) * q - p * (SELECT b FROM frac))
-           AS num, q AS den
-  FROM (SELECT CAST(unnest(range(1, 51)) AS BIGINT) AS q) qs,
-  LATERAL (SELECT unnest([
-    (SELECT a FROM frac) * q // (SELECT b FROM frac),
-    (SELECT a FROM frac) * q // (SELECT b FROM frac) + 1]) AS p) ps
-), exhbest AS (
-  SELECT min(num * 1.0 / den) AS e FROM exh
-), chk AS (
-  SELECT b.p, b.q,
-         abs((SELECT a FROM frac) * b.q - b.p * (SELECT b FROM frac))
-           * 1.0 / ((SELECT b FROM frac) * b.q)
-           <= (SELECT e FROM exhbest) + 1e-18 AS optimal_ok
-  FROM best b WHERE b.rn = 1
-), wlag AS (
-  SELECT w.*,
-         lag(lop) OVER (ORDER BY step) AS plop,
-         lag(loq) OVER (ORDER BY step) AS ploq,
-         lag(hip) OVER (ORDER BY step) AS phip,
-         lag(hiq) OVER (ORDER BY step) AS phiq
-  FROM walk w
-)
-SELECT CAST(w.step AS INTEGER) AS step,
-       CAST(w.lop AS BIGINT) AS lo_p, CAST(w.loq AS BIGINT) AS lo_q,
-       CAST(w.hip AS BIGINT) AS hi_p, CAST(w.hiq AS BIGINT) AS hi_q,
-       CAST(w.medp AS BIGINT) AS med_p,
-       CAST(w.medq AS BIGINT) AS med_q,
-       w.dir,
-       CAST(f.a AS BIGINT) AS frac_num, CAST(f.b AS BIGINT) AS frac_den,
-       CAST(f.int_part AS BIGINT) AS int_part,
-       CAST(c.p AS BIGINT) AS best_p, CAST(c.q AS BIGINT) AS best_q,
-       c.optimal_ok,
-       w.medp = w.plop + w.phip AND w.medq = w.ploq + w.phiq
-         AS mediant_ok
-FROM wlag w CROSS JOIN frac f CROSS JOIN chk c
-WHERE w.step > 0
-"""
-
-
-@register("q_orders_stern_brocot", _STERN_BROCOT_SQL)
-def q_orders_stern_brocot(spark, sf_dir):
-    """Stern-Brocot mediant descent (the binary search over ALL
-    rationals, organized as the tree behind continued fractions and
-    exact rational arithmetic) approximating a genuine data ratio —
-    the fractional part of mean order price in cents, a/b with b =
-    order count — by denominators ≤ 50. Every comparison is an exact
-    integer cross-multiplication (mediant·b vs a·q — no floats decide
-    anything structural); each step replaces one endpoint by the
-    mediant, so the interval always brackets a/b and the denominator
-    strictly grows, bounding the walk at ≤ 50 steps. The emitted best
-    approximant is pinned OPTIMAL against an exhaustive scan of every
-    denominator 1..50 with its two bracketing numerators — the
-    best-rational-approximation guarantee the tree exists for — and
-    the mediant identity med = (lo_p+hi_p)/(lo_q+hi_q) is pinned per
-    step. Engine: two-scalar aggregate then bounded driver replay;
-    oracle: scalar-state recursion + LATERAL exhaustive scan."""
-    s = (_t(spark, sf_dir, "orders")
-         .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-              .alias("tot"), F.count(F.lit(1)).alias("n"))
-         .collect()[0])
-    tot, n = int(s["tot"]), int(s["n"])
-    a, b, int_part = tot % n, n, tot // n
-    lop, loq, hip, hiq = 0, 1, 1, 1
-    path = []
-    step = 0
-    while loq + hiq <= 50:
-        step += 1
-        medp, medq = lop + hip, loq + hiq
-        # each row carries the POST-step interval plus a mediant pin
-        # against the PRE-step endpoints (matching the oracle's lag)
-        ok = medp == lop + hip and medq == loq + hiq
-        if medp * b == a * medq:
-            path.append((step, lop, loq, medp, medq, medp, medq,
-                         "hit", ok))
-            break
-        if medp * b < a * medq:
-            path.append((step, medp, medq, hip, hiq, medp, medq,
-                         "right", ok))
-            lop, loq = medp, medq
-        else:
-            path.append((step, lop, loq, medp, medq, medp, medq,
-                         "left", ok))
-            hip, hiq = medp, medq
-    cand = {(r[5], r[6]) for r in path}
-    cand |= {(r[1], r[2]) for r in path}
-    cand |= {(r[3], r[4]) for r in path if r[4] >= 1 and r[3] <= r[4]}
-    cand = [(p, q) for (p, q) in cand if 1 <= q <= 50]
-    best_p, best_q = min(
-        cand, key=lambda pq: (abs(a * pq[1] - pq[0] * b) / (b * pq[1]),
-                              pq[1], pq[0]))
-    exh = min(abs(a * q - p * b) / (b * q)
-              for q in range(1, 51)
-              for p in (a * q // b, a * q // b + 1))
-    optimal_ok = (abs(a * best_q - best_p * b) / (b * best_q)
-                  <= exh + 1e-18)
-    out = [(st, lo_p, lo_q, hi_p, hi_q, med_p, med_q, d, a, b,
-            int_part, best_p, best_q, optimal_ok, ok)
-           for (st, lo_p, lo_q, hi_p, hi_q, med_p, med_q, d, ok)
-           in path]
-    return spark.createDataFrame(
-        out, "step int, lo_p long, lo_q long, hi_p long, hi_q long,"
-             " med_p long, med_q long, dir string, frac_num long,"
-             " frac_den long, int_part long, best_p long, best_q long,"
-             " optimal_ok boolean, mediant_ok boolean")
-
-
-_ALIAS_SQL = """
-WITH RECURSIVE wts AS (
-  SELECT ii.i, coalesce(cc.w, 0) AS w
-  FROM (SELECT CAST(unnest(range(1, 6)) AS BIGINT) AS i) ii
-  LEFT JOIN (
-    SELECT CASE event_type WHEN 'click' THEN 1 WHEN 'error' THEN 2
-           WHEN 'purchase' THEN 3 WHEN 'signup' THEN 4 ELSE 5 END AS i,
-           CAST(count(*) AS BIGINT) AS w
-    FROM events GROUP BY 1) cc USING (i)
-), ww AS (
-  SELECT list(w * 5 ORDER BY i) AS m0, CAST(sum(w) AS BIGINT) AS cap
-  FROM wts
-), st AS (
-  SELECT 0 AS step,
-         (SELECT m0 FROM ww) AS mass,
-         (SELECT coalesce(list(i ORDER BY i), CAST([] AS BIGINT[]))
-          FROM wts, ww WHERE w * 5 < cap) AS sm,
-         (SELECT coalesce(list(i ORDER BY i), CAST([] AS BIGINT[]))
-          FROM wts, ww WHERE w * 5 > cap) AS lg,
-         (SELECT list(CASE WHEN w * 5 = cap THEN cap
-                           ELSE CAST(-1 AS BIGINT) END ORDER BY i)
-          FROM wts, ww) AS prim,
-         (SELECT list(CAST(0 AS BIGINT) ORDER BY i) FROM wts) AS ali,
-         (SELECT cap FROM ww) AS cap
-  UNION ALL
-  SELECT s.step + 1,
-    CASE WHEN len(s.sm) > 0 AND len(s.lg) > 0 THEN
-      list_transform(range(1, 6), i ->
-        CASE WHEN i = s.lg[1]
-             THEN s.mass[i] - (s.cap - s.mass[s.sm[1]])
-             ELSE s.mass[i] END)
-    ELSE s.mass END,
-    CASE WHEN len(s.sm) > 0 AND len(s.lg) > 0 THEN
-      CASE WHEN s.mass[s.lg[1]] - (s.cap - s.mass[s.sm[1]]) < s.cap
-           THEN list_append(s.sm[2:], s.lg[1])
-           ELSE s.sm[2:] END
-    WHEN len(s.lg) > 0 THEN s.sm
-    ELSE s.sm[2:] END,
-    CASE WHEN len(s.sm) > 0 AND len(s.lg) > 0 THEN
-      CASE WHEN s.mass[s.lg[1]] - (s.cap - s.mass[s.sm[1]]) > s.cap
-           THEN s.lg ELSE s.lg[2:] END
-    WHEN len(s.lg) > 0 THEN s.lg[2:]
-    ELSE s.lg END,
-    CASE WHEN len(s.sm) > 0 AND len(s.lg) > 0 THEN
-      list_transform(range(1, 6), i ->
-        CASE WHEN i = s.sm[1] THEN s.mass[s.sm[1]]
-             WHEN i = s.lg[1] AND s.mass[s.lg[1]]
-                  - (s.cap - s.mass[s.sm[1]]) = s.cap THEN s.cap
-             ELSE s.prim[i] END)
-    WHEN len(s.lg) > 0 THEN
-      list_transform(range(1, 6), i ->
-        CASE WHEN i = s.lg[1] THEN s.cap ELSE s.prim[i] END)
-    ELSE
-      list_transform(range(1, 6), i ->
-        CASE WHEN i = s.sm[1] THEN s.mass[s.sm[1]]
-             ELSE s.prim[i] END)
-    END,
-    CASE WHEN len(s.sm) > 0 AND len(s.lg) > 0 THEN
-      list_transform(range(1, 6), i ->
-        CASE WHEN i = s.sm[1] THEN CAST(s.lg[1] AS BIGINT)
-             ELSE s.ali[i] END)
-    ELSE s.ali END,
-    s.cap
-  FROM st s
-  WHERE len(s.sm) > 0 OR len(s.lg) > 0
-), fin AS (
-  SELECT * FROM st ORDER BY step DESC LIMIT 1
-)
-SELECT CAST(w.i AS INTEGER) AS bucket,
-       CASE w.i WHEN 1 THEN 'click' WHEN 2 THEN 'error'
-                WHEN 3 THEN 'purchase' WHEN 4 THEN 'signup'
-                ELSE 'view' END AS outcome,
-       CAST(w.w AS BIGINT) AS weight,
-       CAST(w.w * 5 AS BIGINT) AS scaled_mass,
-       CAST(f.prim[w.i] AS BIGINT) AS prim_mass,
-       CAST(f.ali[w.i] AS INTEGER) AS alias_bucket,
-       CAST(CASE WHEN f.ali[w.i] = 0 THEN 0
-                 ELSE f.cap - f.prim[w.i] END AS BIGINT) AS alias_mass,
-       f.prim[w.i] + (CASE WHEN f.ali[w.i] = 0 THEN 0
-                           ELSE f.cap - f.prim[w.i] END) = f.cap
-         AS bucket_full,
-       CAST(f.prim[w.i]
-            + (SELECT coalesce(sum(CASE WHEN f.ali[j.j] = w.i
-                 THEN f.cap - f.prim[j.j] ELSE 0 END), 0)
-               FROM (SELECT CAST(unnest(range(1, 6)) AS BIGINT) AS j) j)
-            AS BIGINT) AS received_mass,
-       f.prim[w.i]
-         + (SELECT coalesce(sum(CASE WHEN f.ali[j.j] = w.i
-              THEN f.cap - f.prim[j.j] ELSE 0 END), 0)
-            FROM (SELECT CAST(unnest(range(1, 6)) AS BIGINT) AS j) j)
-         = w.w * 5 AS conservation_ok,
-       CAST((SELECT max(step) FROM st) AS INTEGER) AS n_steps,
-       CAST(f.cap AS BIGINT) AS cap
-FROM wts w CROSS JOIN fin f
-"""
-
-
-@register("q_events_alias_table", _ALIAS_SQL)
-def q_events_alias_table(spark, sf_dir):
-    """Walker/Vose alias method construction (the O(1)-sampling table
-    behind every fast categorical sampler) over the real event-type
-    distribution, in EXACT integer arithmetic: scaled masses m_i =
-    n·w_i against bucket capacity W = Σw (total mass n·W splits into
-    n buckets of exactly W — no floats, no epsilon), built by the
-    deterministic FIFO worklist replay — pair the first small with
-    the first large, fill the small's bucket (primary = its own mass,
-    alias = the large), shrink the large by the donated W − m_s, and
-    reclassify. Both defining invariants are pinned per bucket: every
-    bucket holds at most two outcomes summing EXACTLY to W
-    (bucket_full), and per-outcome mass conservation — primary mass
-    plus all alias donations received equals n·w_i exactly
-    (conservation_ok), which is why sampling (bucket, coin) is
-    unbiased. The count aggregate is the only data-sized stage;
-    engine replays the ≤2n-step worklist driver-side, oracle carries
-    (mass, small-queue, large-queue, primary, alias) as parallel
-    lists through a recursive CTE."""
-    wc = {r["event_type"]: r["n"] for r in
-          (_t(spark, sf_dir, "events")
-           .groupBy("event_type")
-           .agg(F.count(F.lit(1)).alias("n")).collect())}
-    names = ["click", "error", "purchase", "signup", "view"]
-    w = [int(wc.get(t, 0)) for t in names]
-    cap = sum(w)
-    mass = [5 * x for x in w]
-    prim = [cap if m == cap else -1 for m in mass]
-    ali = [0] * 5
-    sm = [i for i in range(1, 6) if mass[i - 1] < cap]
-    lg = [i for i in range(1, 6) if mass[i - 1] > cap]
-    steps = 0
-    while sm or lg:
-        steps += 1
-        if sm and lg:
-            s, l = sm[0], lg[0]
-            prim[s - 1] = mass[s - 1]
-            ali[s - 1] = l
-            mass[l - 1] -= cap - prim[s - 1]
-            sm = sm[1:]
-            if mass[l - 1] < cap:
-                sm = sm + [l]
-                lg = lg[1:]
-            elif mass[l - 1] == cap:
-                prim[l - 1] = cap
-                lg = lg[1:]
-        elif lg:
-            prim[lg[0] - 1] = cap
-            lg = lg[1:]
-        else:
-            prim[sm[0] - 1] = mass[sm[0] - 1]
-            sm = sm[1:]
-    out = []
-    for i in range(1, 6):
-        am = 0 if ali[i - 1] == 0 else cap - prim[i - 1]
-        received = prim[i - 1] + sum(
-            cap - prim[j - 1] for j in range(1, 6) if ali[j - 1] == i)
-        out.append((i, names[i - 1], w[i - 1], 5 * w[i - 1],
-                    prim[i - 1], ali[i - 1], am,
-                    prim[i - 1] + am == cap, received,
-                    received == 5 * w[i - 1], steps, cap))
-    return spark.createDataFrame(
-        out, "bucket int, outcome string, weight long,"
-             " scaled_mass long, prim_mass long, alias_bucket int,"
-             " alias_mass long, bucket_full boolean,"
-             " received_mass long, conservation_ok boolean,"
-             " n_steps int, cap long")
-
-
-_KMP_SQL = """
-WITH s0 AS (
-  SELECT substr(lower(string_agg(text, ' ' ORDER BY doc_id)), 1, 120)
-           AS s
-  FROM (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT 2)
-), nn AS (
-  SELECT length(s) AS n FROM s0
-), pos AS (
-  SELECT CAST(unnest(range(1, (SELECT n FROM nn) + 1)) AS BIGINT) AS i
-), borders AS (
-  SELECT p.i, k.k
-  FROM pos p
-  JOIN (SELECT CAST(unnest(range(0, 120)) AS BIGINT) AS k) k
-    ON k.k < p.i
-   AND (k.k = 0 OR substr((SELECT s FROM s0), 1,
-                          CAST(k.k AS INTEGER))
-        = substr((SELECT s FROM s0),
-                 CAST(p.i - k.k + 1 AS INTEGER),
-                 CAST(k.k AS INTEGER)))
-), pif AS (
-  SELECT i, max(k) AS pi FROM borders GROUP BY i
-)
-SELECT CAST(p.i AS INTEGER) AS i,
-       substr((SELECT s FROM s0), CAST(p.i AS INTEGER), 1) AS ch,
-       CAST(p.pi AS INTEGER) AS pi,
-       CAST(p.i - p.pi AS INTEGER) AS period,
-       (p.i % (p.i - p.pi)) = 0 AS full_period,
-       p.pi <= coalesce(lag(p.pi) OVER (ORDER BY p.i), 0) + 1
-         AS chain_step_ok,
-       p.pi < p.i AS proper_ok,
-       CAST((SELECT n FROM nn) AS INTEGER) AS n
-FROM pif p
-"""
-
-
-@register("text_kmp_prefix_function", _KMP_SQL)
-def text_kmp_prefix_function(spark, sf_dir):
-    """The KMP prefix (failure) function, two definitions forced to
-    agree: the ENGINE runs the genuine Knuth-Morris-Pratt recurrence
-    over the corpus prefix (k := π[i−1]; while k > 0 and s[i] ≠
-    s[k+1]: k := π[k] — the amortized-linear failure-chain walk),
-    while the ORACLE computes the DEFINITION — π[i] = the longest
-    proper border, max k < i with prefix(k) = suffix-ending-at-i(k) —
-    by a brute position×length substring join. Gate hash-equality is
-    a machine-checked proof the recurrence computes the maximal
-    border on this text (the correctness argument of KMP). Side
-    theorems ride along pinned: π[i] < i (properness), the
-    chain-growth bound π[i] ≤ π[i−1]+1 (why KMP is linear), and the
-    periodicity column i − π[i] with its divisibility flag (the
-    fundamental period when full_period holds — Fine-Wilf territory).
-    Input is the lowercased 120-char prefix of the first two
-    documents, the same planner-scale discipline as the BWT/FM rows;
-    at scale the per-document failure function is a map-side Arrow
-    batch per partition."""
-    docs = (_t(spark, sf_dir, "documents")
-            .select("doc_id", "text").orderBy("doc_id").limit(2)
-            .collect())
-    s = " ".join(r["text"] for r in docs).lower()[:120]
-    n = len(s)
-    pi = [0] * (n + 1)  # 1-indexed
-    for i in range(2, n + 1):
-        k = pi[i - 1]
-        while k > 0 and s[i - 1] != s[k]:
-            k = pi[k]
-        if s[i - 1] == s[k]:
-            k += 1
-        pi[i] = k
-    out = []
-    for i in range(1, n + 1):
-        period = i - pi[i]
-        prev = pi[i - 1] if i > 1 else 0
-        out.append((i, s[i - 1], pi[i], period, i % period == 0,
-                    pi[i] <= prev + 1, pi[i] < i, n))
-    return spark.createDataFrame(
-        out, "i int, ch string, pi int, period int,"
-             " full_period boolean, chain_step_ok boolean,"
-             " proper_ok boolean, n int")
-
-
-# CYK cell encoding: i*1000 + j*10 + nt, nonterminals S=0 T=1 L=2 R=3.
-# Grammar (CNF): S -> S S | L T | L R | e | p | s ; T -> S R ;
-# L -> c ; R -> v. Language: the projection onto {c, v} is a balanced
-# Dyck word (clicks open, views close, other letters are noise).
-_CYK_SQL = """
-WITH RECURSIVE u100 AS (
-  SELECT user_id FROM (SELECT DISTINCT user_id FROM events
-                       ORDER BY user_id LIMIT 100)
-), ev AS (
-  SELECT e.user_id,
-         CASE e.event_type WHEN 'click' THEN 'c' WHEN 'error' THEN 'e'
-              WHEN 'purchase' THEN 'p' WHEN 'signup' THEN 's'
-              ELSE 'v' END AS ch,
-         row_number() OVER (PARTITION BY e.user_id
-                            ORDER BY e.ts, e.event_id) AS idx
-  FROM events e JOIN u100 USING (user_id)
-  QUALIFY idx <= 10
-), seqs AS (
-  SELECT user_id, string_agg(ch, '' ORDER BY idx) AS seq,
-         count(*) AS n, list(ch ORDER BY idx) AS cs
-  FROM ev GROUP BY user_id
-), run AS (
-  SELECT user_id, idx,
-         sum(CASE ch WHEN 'c' THEN 1 WHEN 'v' THEN -1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY idx) AS depth
-  FROM ev
-), dy AS (
-  SELECT user_id,
-         min(depth) >= 0 AND max_by(depth, idx) = 0 AS balanced
-  FROM run GROUP BY user_id
-), st AS (
-  SELECT user_id, 1 AS it, cs,
-         list_distinct(list_transform(range(1, len(cs) + 1), i ->
-           i * 1000 + i * 10 + CASE cs[i] WHEN 'c' THEN 2
-                                          WHEN 'v' THEN 3
-                                          ELSE 0 END)) AS cells
-  FROM seqs
-  UNION ALL
-  SELECT s.user_id, s.it + 1, s.cs,
-    list_distinct(list_concat(s.cells,
-      flatten(list_transform(s.cells, a ->
-        list_filter(list_transform(s.cells, b ->
-          CASE WHEN (a % 1000) // 10 + 1 = b // 1000 THEN
-            CASE
-              WHEN a % 10 = 0 AND b % 10 = 0 THEN
-                (a // 1000) * 1000 + ((b % 1000) // 10) * 10 + 0
-              WHEN a % 10 = 2 AND b % 10 = 1 THEN
-                (a // 1000) * 1000 + ((b % 1000) // 10) * 10 + 0
-              WHEN a % 10 = 2 AND b % 10 = 3 THEN
-                (a // 1000) * 1000 + ((b % 1000) // 10) * 10 + 0
-              WHEN a % 10 = 0 AND b % 10 = 3 THEN
-                (a // 1000) * 1000 + ((b % 1000) // 10) * 10 + 1
-              ELSE NULL END
-          ELSE NULL END),
-        x -> x IS NOT NULL)))))
-  FROM st s WHERE s.it < 10
-), fin AS (
-  SELECT user_id, cells FROM st WHERE it = 10
-)
-SELECT CAST(s.user_id AS BIGINT) AS user_id, s.seq,
-       CAST(s.n AS INTEGER) AS n,
-       list_contains(f.cells, 1000 + s.n * 10) AS cyk_accept,
-       d.balanced AS dyck_balanced,
-       list_contains(f.cells, 1000 + s.n * 10) = d.balanced AS agree,
-       CAST(len(f.cells) AS INTEGER) AS n_cells
-FROM seqs s JOIN fin f USING (user_id) JOIN dy d USING (user_id)
-"""
-
-
-@register("q_events_cyk_parse", _CYK_SQL)
-def q_events_cyk_parse(spark, sf_dir):
-    """CYK parsing (the O(n³) CNF dynamic program of formal language
-    theory) run as a genuinely DISTRIBUTED DP: the first 10 events of
-    each of the first 100 users form a string over {c,e,p,s,v}, and
-    the grammar S → SS | LT | LR | e | p | s, T → SR, L → c, R → v
-    recognizes sessions whose click/view projection is a balanced
-    Dyck word (clicks open, views close, everything else is noise).
-    The engine iterates the span table as nine rounds of self-join +
-    rule match + distinct over a (user, i, j, nonterminal) DataFrame
-    — every user's chart fills simultaneously, the shard-by-document
-    shape of parsing 10⁹ short strings — while the oracle carries
-    each user's chart as an encoded-cell list through a recursive CTE
-    with nested-lambda pair derivation. Pinned per user: CYK
-    acceptance EQUALS an independent semantic check (running click/
-    view depth never negative and ending at zero — one window), i.e.
-    the grammar provably recognizes exactly the intended language on
-    every real session (agree); the full chart size n_cells rides
-    through the gate so the two DP tables, not just the verdicts,
-    must match."""
-    u100 = (_t(spark, sf_dir, "events").select("user_id").distinct()
-            .orderBy("user_id").limit(100))
-    ev = (_t(spark, sf_dir, "events")
-          .join(F.broadcast(u100), "user_id")
-          .select("user_id", "ts", "event_id",
-                  F.expr("CASE event_type WHEN 'click' THEN 'c'"
-                         " WHEN 'error' THEN 'e'"
-                         " WHEN 'purchase' THEN 'p'"
-                         " WHEN 'signup' THEN 's' ELSE 'v' END")
-                  .alias("ch"))
-          .withColumn("idx", F.row_number().over(
-              Window.partitionBy("user_id").orderBy("ts", "event_id")))
-          .filter(F.col("idx") <= 10))
-    seqs = ev.groupBy("user_id").agg(
-        F.concat_ws("", F.expr(
-            "transform(array_sort(collect_list(struct(idx, ch))),"
-            " x -> x.ch)")).alias("seq"),
-        F.count(F.lit(1)).alias("n"))
-    run = ev.withColumn("depth", F.sum(
-        F.expr("CASE ch WHEN 'c' THEN 1 WHEN 'v' THEN -1 ELSE 0 END"))
-        .over(Window.partitionBy("user_id").orderBy("idx")))
-    dy = run.groupBy("user_id").agg(
-        ((F.min("depth") >= 0)
-         & (F.max_by("depth", "idx") == 0)).alias("balanced"))
-    # span-1 chart: terminals
-    cells = ev.select(
-        "user_id", F.col("idx").alias("i"), F.col("idx").alias("j"),
-        F.expr("CASE ch WHEN 'c' THEN 2 WHEN 'v' THEN 3 ELSE 0 END")
-        .alias("nt"))
-    rule = F.expr(
-        "CASE WHEN ant = 0 AND bnt = 0 THEN 0"
-        " WHEN ant = 2 AND bnt = 1 THEN 0"
-        " WHEN ant = 2 AND bnt = 3 THEN 0"
-        " WHEN ant = 0 AND bnt = 3 THEN 1"
-        " ELSE NULL END")
-    # eager localCheckpoint per round: truncates the logical plan so
-    # nine rounds of self-join + union + distinct never build a deep
-    # cached-union lineage (which trips Spark's analyzer)
-    cells = cells.localCheckpoint()
-    for _ in range(9):
-        a = cells.select(F.col("user_id").alias("u"),
-                         F.col("i").alias("ai"), F.col("j").alias("aj"),
-                         F.col("nt").alias("ant"))
-        b = cells.select(F.col("user_id").alias("u"),
-                         F.col("i").alias("bi"), F.col("j").alias("bj"),
-                         F.col("nt").alias("bnt"))
-        new = (a.join(b, ["u"])
-               .filter(F.col("aj") + 1 == F.col("bi"))
-               .select(F.col("u").alias("user_id"),
-                       F.col("ai").alias("i"), F.col("bj").alias("j"),
-                       rule.alias("nt"))
-               .filter(F.col("nt").isNotNull()))
-        cells = (cells.unionByName(new).distinct()
-                 .coalesce(8).localCheckpoint())
-    acc = (cells.filter(F.col("nt") == 0).filter(F.col("i") == 1)
-           .select("user_id", F.col("j").alias("cover")))
-    ncells = cells.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_cells"))
-    accepted = (seqs.join(acc, (seqs.user_id == acc.user_id)
-                          & (seqs.n == acc.cover), "left_semi")
-                .select(F.col("user_id").alias("au")))
-    return (seqs.join(dy, "user_id").join(ncells, "user_id")
-            .join(accepted.withColumn("hit", F.lit(True)),
-                  seqs.user_id == accepted.au, "left")
-            .withColumn("cyk_accept",
-                        F.coalesce("hit", F.lit(False)))
-            .select(F.col("user_id").cast("long"), "seq",
-                    F.col("n").cast("int"),
-                    "cyk_accept",
-                    F.col("balanced").alias("dyck_balanced"),
-                    (F.col("cyk_accept") == F.col("balanced"))
-                    .alias("agree"),
-                    F.col("n_cells").cast("int")))
-
-
-_MANACHER_SQL = """
-WITH s0 AS (
-  SELECT substr(lower(string_agg(text, ' ' ORDER BY doc_id)), 1, 160)
-           AS s
-  FROM (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT 2)
-), nn AS (
-  SELECT length(s) AS n FROM s0
-), centers AS (
-  SELECT CAST(unnest(range(1, 2 * (SELECT n FROM nn) + 2)) AS BIGINT)
-           AS j
-), cand AS (
-  -- definitional: for transformed-center j, palindrome length p in
-  -- the ORIGINAL string; p valid iff the span is a real palindrome
-  SELECT c.j, p.p,
-         CAST((c.j - p.p) // 2 + 1 AS INTEGER) AS st
-  FROM centers c
-  JOIN (SELECT CAST(unnest(range(0, 161)) AS BIGINT) AS p) p
-    ON ((c.j % 2 = 0 AND p.p % 2 = 1)
-        OR (c.j % 2 = 1 AND p.p % 2 = 0))
-   AND c.j - p.p >= 1 AND c.j + p.p <= 2 * (SELECT n FROM nn) + 1
-   AND (p.p = 0 OR substr((SELECT s FROM s0),
-                          CAST((c.j - p.p) // 2 + 1 AS INTEGER),
-                          CAST(p.p AS INTEGER))
-        = reverse(substr((SELECT s FROM s0),
-                         CAST((c.j - p.p) // 2 + 1 AS INTEGER),
-                         CAST(p.p AS INTEGER))))
-), pj AS (
-  SELECT j, max(p) AS p FROM cand GROUP BY j
-), rows_ AS (
-  SELECT p.j,
-         CASE WHEN p.j % 2 = 0 THEN 'char' ELSE 'gap' END AS kind,
-         p.p AS pal_len,
-         CAST((p.j - p.p) // 2 + 1 AS INTEGER) AS start_pos,
-         substr((SELECT s FROM s0),
-                CAST((p.j - p.p) // 2 + 1 AS INTEGER),
-                CAST(p.p AS INTEGER)) AS pal,
-         (p.j - p.p) // 2 < 1
-           OR (p.j + p.p) // 2 + 1 > (SELECT n FROM nn)
-           OR substr((SELECT s FROM s0),
-                     CAST((p.j - p.p) // 2 AS INTEGER), 1)
-              <> substr((SELECT s FROM s0),
-                        CAST((p.j + p.p) // 2 + 1 AS INTEGER), 1)
-           AS maximal_ok
-  FROM pj p
-), best AS (
-  SELECT pal_len AS best_len, start_pos AS best_start
-  FROM rows_ ORDER BY pal_len DESC, start_pos, j LIMIT 1
-)
-SELECT CAST(r.j AS INTEGER) AS j, r.kind,
-       CAST(r.pal_len AS INTEGER) AS pal_len,
-       r.start_pos, r.pal,
-       r.pal = reverse(r.pal) AS is_pal_ok,
-       r.maximal_ok,
-       CAST(b.best_len AS INTEGER) AS best_len,
-       b.best_start,
-       CAST((SELECT n FROM nn) AS INTEGER) AS n
-FROM rows_ r CROSS JOIN best b
-"""
-
-
-@register("text_manacher_palindromes", _MANACHER_SQL)
-def text_manacher_palindromes(spark, sf_dir):
-    """Manacher's algorithm (1975 — longest palindromic substring in
-    linear time via the mirror trick) versus the DEFINITION: the
-    ENGINE runs genuine Manacher over the separator-transformed
-    corpus prefix — center/right-boundary tracking, each radius
-    seeded from its mirror p[2C−j] clamped to the boundary, then
-    explicit expansion — while the ORACLE computes every
-    transformed-center's palindrome length definitionally (max p such
-    that the spanned substring equals its own reverse, a center ×
-    radius join). Gate hash-equality machine-checks the mirror
-    argument on real text, center by center — all 2n+1 of them.
-    Riding pins: every reported palindrome re-verified against its
-    reverse (is_pal_ok), maximality pinned by boundary-or-mismatch at
-    both extension characters (maximal_ok — the invariant that makes
-    the expansion stop correctly), and the global longest palindrome
-    with a total-order tiebreak. Same 160-char two-document prefix
-    discipline as the KMP/BWT rows; at corpus scale this is a
-    map-side per-document pass."""
-    docs = (_t(spark, sf_dir, "documents")
-            .select("doc_id", "text").orderBy("doc_id").limit(2)
-            .collect())
-    s = " ".join(r["text"] for r in docs).lower()[:160]
-    n = len(s)
-    t = "#" + "#".join(s) + "#"          # length 2n+1
-    m = len(t)
-    p = [0] * (m + 1)                     # 1-based radii
-    c = r = 0                             # center, right boundary
-    for j in range(1, m + 1):
-        if j < r:
-            p[j] = min(r - j, p[2 * c - j])
-        while (j - p[j] - 1 >= 1 and j + p[j] + 1 <= m
-               and t[j - p[j] - 2] == t[j + p[j]]):
-            p[j] += 1
-        if j + p[j] > r:
-            c, r = j, j + p[j]
-    out = []
-    for j in range(1, m + 1):
-        pl = p[j]
-        st = (j - pl) // 2 + 1
-        pal = s[st - 1:st - 1 + pl]
-        lo, hi = (j - pl) // 2, (j + pl) // 2 + 1
-        maximal = lo < 1 or hi > n or s[lo - 1] != s[hi - 1]
-        out.append((j, "char" if j % 2 == 0 else "gap", pl, st, pal,
-                    pal == pal[::-1], maximal))
-    best = max(out, key=lambda r_: (r_[2], -r_[3], -r_[0]))
-    rows = [(j, k, pl, st, pal, ok, mx, best[2], best[3], n)
-            for (j, k, pl, st, pal, ok, mx) in out]
-    return spark.createDataFrame(
-        rows, "j int, kind string, pal_len int, start_pos int,"
-              " pal string, is_pal_ok boolean, maximal_ok boolean,"
-              " best_len int, best_start int, n int")
-
-
-_HALL_KONIG_SQL = """
-WITH u12 AS (
-  SELECT user_id, row_number() OVER (ORDER BY user_id) AS ur
-  FROM (SELECT DISTINCT user_id FROM events ORDER BY user_id LIMIT 12)
-), cnts AS (
-  SELECT u.ur,
-         CASE e.event_type WHEN 'click' THEN 1 WHEN 'error' THEN 2
-              WHEN 'purchase' THEN 3 WHEN 'signup' THEN 4
-              ELSE 5 END AS t,
-         count(*) AS c
-  FROM events e JOIN u12 u USING (user_id)
-  GROUP BY 1, 2
-), tot AS (
-  SELECT ur, sum(c) AS tc FROM cnts GROUP BY ur
-), edges AS (
-  SELECT c.t, c.ur FROM cnts c JOIN tot USING (ur)
-  WHERE 25 * c.c > 6 * tot.tc
-), masks AS (
-  SELECT CAST(unnest(range(1, 32)) AS BIGINT) AS mask
-), ns AS (
-  SELECT m.mask, count(DISTINCT e.ur) AS nsz
-  FROM masks m LEFT JOIN edges e ON ((m.mask >> (e.t - 1)) & 1) = 1
-  GROUP BY m.mask
-), defs AS (
-  SELECT m.mask, bit_count(m.mask) AS ssz, ns.nsz,
-         bit_count(m.mask) - ns.nsz AS def
-  FROM masks m JOIN ns USING (mask)
-), mx AS (
-  SELECT greatest(max(def), 0) AS d FROM defs
-), tight AS (
-  SELECT coalesce((SELECT min(mask) FROM defs, mx
-                   WHERE def = d AND d > 0), 0) AS smask
-), ts AS (
-  SELECT t.smask, bit_count(t.smask) AS s_size,
-         coalesce((SELECT count(DISTINCT e.ur) FROM edges e
-                   WHERE ((t.smask >> (e.t - 1)) & 1) = 1), 0) AS s_ns
-  FROM tight t
-), gl AS (
-  SELECT (SELECT d FROM mx) AS maxdef,
-         5 - (SELECT d FROM mx) AS matching_size,
-         (5 - ts.s_size) + ts.s_ns AS cover_size,
-         ts.smask
-  FROM ts
-), cchk AS (
-  SELECT coalesce(bool_and(
-           ((g.smask >> (e.t - 1)) & 1) = 0
-           OR EXISTS (SELECT 1 FROM edges e2
-                      WHERE e2.ur = e.ur
-                        AND ((g.smask >> (e2.t - 1)) & 1) = 1)),
-         TRUE) AS cover_ok
-  FROM gl g LEFT JOIN edges e ON TRUE
-), ne AS (
-  SELECT count(*) AS n_edges FROM edges
-)
-SELECT CAST(d.mask AS INTEGER) AS mask,
-       concat(CASE WHEN d.mask & 1 > 0 THEN 'C' ELSE '' END,
-              CASE WHEN d.mask & 2 > 0 THEN 'E' ELSE '' END,
-              CASE WHEN d.mask & 4 > 0 THEN 'P' ELSE '' END,
-              CASE WHEN d.mask & 8 > 0 THEN 'S' ELSE '' END,
-              CASE WHEN d.mask & 16 > 0 THEN 'V' ELSE '' END)
-         AS subset,
-       CAST(d.ssz AS INTEGER) AS size_s,
-       CAST(d.nsz AS INTEGER) AS n_neighbors,
-       CAST(d.def AS INTEGER) AS deficiency,
-       d.mask = g.smask AS is_tight,
-       CAST(g.maxdef AS INTEGER) AS max_deficiency,
-       CAST(g.matching_size AS INTEGER) AS matching_size,
-       CAST(g.cover_size AS INTEGER) AS cover_size,
-       g.cover_size = g.matching_size AS konig_equal,
-       c.cover_ok,
-       g.matching_size = 5 AS perfect_left_matching,
-       CAST(n.n_edges AS INTEGER) AS n_edges,
-       12 AS n_users
-FROM defs d CROSS JOIN gl g CROSS JOIN cchk c CROSS JOIN ne n
-"""
-
-
-@register("q_events_hall_konig", _HALL_KONIG_SQL)
-def q_events_hall_konig(spark, sf_dir):
-    """Hall's marriage theorem and König-Egerváry duality over a real
-    bipartite graph — event types vs the first 12 users, an edge when
-    a type takes more than 24% of that user's activity (scale-free
-    threshold, so the structure is honestly data-derived): the
-    deficiency form computes max matching = |L| − max_S(|S| − |N(S)|)
-    by scanning ALL 31 left subsets (one bitmask join, the Apriori
-    lattice discipline — fully distributed), picks the canonical
-    tight set (smallest deficiency-maximizing mask), and constructs
-    König's minimum vertex cover (L∖S*) ∪ N(S*) whose size is pinned
-    equal to the matching size (konig_equal) and whose edge coverage
-    is machine-checked edge by edge (cover_ok). The ENGINE
-    additionally runs Kuhn's augmenting-path algorithm over the
-    collected edge list and ASSERTS the Berge/König agreement
-    kuhn == 5 − max-deficiency in-function — an actual maximum
-    matching validates the subset formula every run, and pytest
-    re-derives both independently."""
-    u12 = (_t(spark, sf_dir, "events").select("user_id").distinct()
-           .orderBy("user_id").limit(12)
-           .withColumn("ur", F.row_number().over(
-               Window.orderBy("user_id"))))
-    cnts = (_t(spark, sf_dir, "events")
-            .join(F.broadcast(u12), "user_id")
-            .groupBy("ur", F.expr(
-                "CASE event_type WHEN 'click' THEN 1"
-                " WHEN 'error' THEN 2 WHEN 'purchase' THEN 3"
-                " WHEN 'signup' THEN 4 ELSE 5 END").alias("t"))
-            .agg(F.count(F.lit(1)).alias("c")))
-    tot = cnts.groupBy("ur").agg(F.sum("c").alias("tc"))
-    edges = (cnts.join(tot, "ur")
-             .filter(25 * F.col("c") > 6 * F.col("tc"))
-             .select("t", "ur"))
-    edges = edges.persist()
-    masks = spark.range(1, 32).select(F.col("id").alias("mask"))
-    ns = (masks.join(edges, F.expr("(mask >> (t - 1)) & 1 = 1"),
-                     "left")
-          .groupBy("mask").agg(F.countDistinct("ur").alias("nsz")))
-    defs = ns.select("mask", F.bit_count("mask").alias("ssz"), "nsz",
-                     (F.bit_count("mask") - F.col("nsz")).alias("dd"))
-    mx = defs.agg(F.greatest(F.max("dd"), F.lit(0)).alias("d"))
-    tight = (defs.crossJoin(F.broadcast(mx))
-             .filter((F.col("dd") == F.col("d")) & (F.col("d") > 0))
-             .agg(F.min("mask").alias("smask"))
-             .select(F.coalesce("smask", F.lit(0)).alias("smask")))
-    ts = (tight.join(edges, F.expr("(smask >> (t - 1)) & 1 = 1"),
-                     "left")
-          .groupBy("smask")
-          .agg(F.countDistinct("ur").alias("s_ns")))
-    gl = (ts.crossJoin(F.broadcast(mx))
-          .select("smask",
-                  F.col("d").alias("maxdef"),
-                  (5 - F.col("d")).alias("matching_size"),
-                  ((5 - F.bit_count("smask")) + F.col("s_ns"))
-                  .alias("cover_size")))
-    cchk = (gl.join(edges, F.lit(True), "left")
-            .select(F.coalesce(
-                (F.expr("(smask >> (t - 1)) & 1 = 0"))
-                | F.col("ur").isNotNull()
-                & F.expr("(smask >> (t - 1)) & 1 = 1"),
-                F.lit(True)).alias("edge_cov"))
-            .agg(F.coalesce(F.min("edge_cov"), F.lit(True))
-                 .alias("cover_ok")))
-    ne = edges.agg(F.count(F.lit(1)).alias("n_edges"))
-
-    # Kuhn's augmenting-path maximum matching over the collected edge
-    # list (planner-scale), asserting the deficiency formula
-    erows = sorted((int(r["t"]), int(r["ur"]))
-                   for r in edges.collect())
-    adj: dict = {}
-    for t, u in erows:
-        adj.setdefault(t, []).append(u)
-    match_u: dict = {}
-
-    def try_aug(t, seen):
-        for u in adj.get(t, []):
-            if u in seen:
-                continue
-            seen.add(u)
-            if u not in match_u or try_aug(match_u[u], seen):
-                match_u[u] = t
-                return True
-        return False
-
-    kuhn = sum(1 for t in sorted(adj) if try_aug(t, set()))
-    defvals = [bin(m).count("1")
-               - len({u for t2, u in erows if (m >> (t2 - 1)) & 1})
-               for m in range(1, 32)]
-    assert kuhn == 5 - max(max(defvals), 0), \
-        "König/deficiency disagreement — theorem violated"
-
-    letters = F.concat(
-        *[F.when(F.col("mask").bitwiseAND(1 << b) > 0,
-                 F.lit("CEPSV"[b])).otherwise(F.lit(""))
-          for b in range(5)])
-    return (defs.crossJoin(F.broadcast(gl))
-            .crossJoin(F.broadcast(cchk))
-            .crossJoin(F.broadcast(ne))
-            .select(F.col("mask").cast("int").alias("mask"),
-                    letters.alias("subset"),
-                    F.col("ssz").cast("int").alias("size_s"),
-                    F.col("nsz").cast("int").alias("n_neighbors"),
-                    F.col("dd").cast("int").alias("deficiency"),
-                    (F.col("mask") == F.col("smask")).alias("is_tight"),
-                    F.col("maxdef").cast("int")
-                    .alias("max_deficiency"),
-                    F.col("matching_size").cast("int"),
-                    F.col("cover_size").cast("int"),
-                    (F.col("cover_size") == F.col("matching_size"))
-                    .alias("konig_equal"),
-                    "cover_ok",
-                    (F.col("matching_size") == 5)
-                    .alias("perfect_left_matching"),
-                    F.col("n_edges").cast("int"),
-                    F.lit(12).cast("int").alias("n_users")))
-
-
-_TANS_SQL = """
-WITH RECURSIVE s0 AS (
-  SELECT substr(lower(string_agg(text, ' ' ORDER BY doc_id)), 1, 160)
-           AS s
-  FROM (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT 2)
-), cls AS (
-  SELECT i.i,
-         CASE WHEN substr(s0.s, CAST(i.i AS INTEGER), 1) = ' ' THEN 0
-              WHEN substr(s0.s, CAST(i.i AS INTEGER), 1)
-                   IN ('a','e','i','o','u') THEN 1
-              WHEN substr(s0.s, CAST(i.i AS INTEGER), 1)
-                   BETWEEN 'a' AND 'z' THEN 2
-              ELSE 3 END AS sym
-  FROM s0, (SELECT CAST(unnest(range(1, 161)) AS BIGINT) AS i) i
-), syms AS (
-  SELECT v.s AS sym, coalesce(c.c, 0) AS c
-  FROM (VALUES (0), (1), (2), (3)) v(s)
-  LEFT JOIN (SELECT sym, count(*) AS c FROM cls GROUP BY sym) c
-    ON c.sym = v.s
-), tt AS (
-  SELECT sum(c) AS t FROM syms
-), base AS (
-  SELECT sym, c, c * 16 // t AS b, (c * 16) % t AS fr FROM syms, tt
-), plus AS (
-  SELECT b.sym, b.c,
-         b.b + CASE WHEN row_number() OVER (ORDER BY b.fr DESC, b.sym)
-                         <= 16 - (SELECT sum(b2.b) FROM base b2)
-                    THEN 1 ELSE 0 END AS f
-  FROM base b
-), zfix AS (
-  SELECT count(*) AS z FROM plus WHERE c > 0 AND f = 0
-), bigsym AS (
-  SELECT sym FROM plus ORDER BY f DESC, sym LIMIT 1
-), freq AS (
-  SELECT p.sym,
-         CASE WHEN p.c > 0 AND p.f = 0 THEN 1
-              WHEN p.sym = (SELECT sym FROM bigsym)
-              THEN p.f - (SELECT z FROM zfix)
-              ELSE p.f END AS f,
-         p.c
-  FROM plus p
-), cum AS (
-  SELECT sym, f,
-         coalesce(sum(f) OVER (ORDER BY sym ROWS BETWEEN UNBOUNDED
-                               PRECEDING AND 1 PRECEDING), 0) AS lo
-  FROM freq
-), spread AS (
-  SELECT (13 * k.k) % 16 AS slot, c.sym
-  FROM (SELECT CAST(unnest(range(0, 16)) AS BIGINT) AS k) k
-  JOIN cum c ON k.k >= c.lo AND k.k < c.lo + c.f
-), ranks AS (
-  SELECT slot, sym,
-         row_number() OVER (PARTITION BY sym ORDER BY slot) - 1 AS rk
-  FROM spread
-), seq AS (
-  SELECT i, sym FROM cls WHERE i <= 48
-), enc(step, x, bits, nb, bval, sym, xs) AS (
-  SELECT 0, CAST(16 AS BIGINT), '', CAST(0 AS BIGINT),
-         CAST(0 AS BIGINT), CAST(-1 AS BIGINT), CAST(0 AS BIGINT)
-  UNION ALL
-  SELECT e.step + 1,
-         16 + (SELECT r.slot FROM ranks r
-               WHERE r.sym = q.sym AND r.rk = (e.x >> q.nb) - q.f),
-         e.bits
-           || CASE WHEN q.nb >= 1
-                   THEN CAST((q.bval >> 0) & 1 AS VARCHAR) ELSE '' END
-           || CASE WHEN q.nb >= 2
-                   THEN CAST((q.bval >> 1) & 1 AS VARCHAR) ELSE '' END
-           || CASE WHEN q.nb >= 3
-                   THEN CAST((q.bval >> 2) & 1 AS VARCHAR) ELSE '' END
-           || CASE WHEN q.nb >= 4
-                   THEN CAST((q.bval >> 3) & 1 AS VARCHAR) ELSE '' END,
-         q.nb, q.bval, q.sym, e.x >> q.nb
-  FROM enc e, LATERAL (
-    SELECT s.sym, f.f,
-           length(bin(e.x // f.f)) - 1 AS nb,
-           e.x & ((CAST(1 AS BIGINT)
-                   << (length(bin(e.x // f.f)) - 1)) - 1) AS bval
-    FROM seq s JOIN freq f ON f.sym = s.sym
-    WHERE s.i = 48 - e.step
-  ) q
-  WHERE e.step < 48
-), fin AS (
-  SELECT x AS xf, bits AS bs FROM enc WHERE step = 48
-), dec(j, x, bits, ok) AS (
-  SELECT 0, (SELECT xf FROM fin), (SELECT bs FROM fin), TRUE
-  UNION ALL
-  SELECT d.j + 1,
-         (q.xs << q.nb2)
-           | (CASE WHEN q.nb2 >= 1 THEN CAST(substr(d.bits,
-                CAST(length(d.bits) - q.nb2 + 1 AS INTEGER), 1)
-                AS BIGINT) << 0 ELSE 0 END
-              + CASE WHEN q.nb2 >= 2 THEN CAST(substr(d.bits,
-                CAST(length(d.bits) - q.nb2 + 2 AS INTEGER), 1)
-                AS BIGINT) << 1 ELSE 0 END
-              + CASE WHEN q.nb2 >= 3 THEN CAST(substr(d.bits,
-                CAST(length(d.bits) - q.nb2 + 3 AS INTEGER), 1)
-                AS BIGINT) << 2 ELSE 0 END
-              + CASE WHEN q.nb2 >= 4 THEN CAST(substr(d.bits,
-                CAST(length(d.bits) - q.nb2 + 4 AS INTEGER), 1)
-                AS BIGINT) << 3 ELSE 0 END),
-         substr(d.bits, 1,
-                CAST(length(d.bits) - q.nb2 AS INTEGER)),
-         d.ok AND q.dsym = (SELECT sym FROM seq
-                            WHERE i = d.j + 1)
-  FROM dec d, LATERAL (
-    SELECT rr.sym AS dsym, f.f + rr.rk AS xs,
-           5 - length(bin(f.f + rr.rk)) AS nb2
-    FROM ranks rr JOIN freq f ON f.sym = rr.sym
-    WHERE rr.slot = d.x - 16
-  ) q
-  WHERE d.j < 48
-), dfin AS (
-  SELECT ok AND x = 16 AND bits = '' AS decode_ok
-  FROM dec WHERE j = 48
-), glb AS (
-  SELECT (SELECT xf FROM fin) AS final_state,
-         (SELECT sum(nb) FROM enc WHERE step > 0) AS total_bits,
-         (SELECT decode_ok FROM dfin) AS decode_ok,
-         (SELECT string_agg(CAST(sym AS VARCHAR), '' ORDER BY slot)
-          FROM spread) AS table_str
-)
-SELECT CAST(e.step AS INTEGER) AS step,
-       CAST(49 - e.step AS INTEGER) AS pos,
-       CAST(e.sym AS INTEGER) AS symbol,
-       CAST(f.f AS INTEGER) AS freq,
-       CAST((e.xs << e.nb) + e.bval AS BIGINT) AS x_before,
-       CAST(e.nb AS INTEGER) AS nb_bits,
-       CAST(e.bval AS BIGINT) AS bits_val,
-       CAST(e.xs AS BIGINT) AS x_small,
-       CAST(e.x AS BIGINT) AS x_after,
-       e.xs >= f.f AND e.xs < 2 * f.f AS range_ok,
-       CAST(g.final_state AS BIGINT) AS final_state,
-       CAST(g.total_bits AS BIGINT) AS total_bits,
-       g.decode_ok, g.table_str
-FROM enc e JOIN freq f ON f.sym = e.sym CROSS JOIN glb g
-WHERE e.step > 0
-"""
-
-
-@register("text_tans_coding", _TANS_SQL)
-def text_tans_coding(spark, sf_dir):
-    """Table-based asymmetric numeral systems (tANS — Duda's entropy
-    coder as implemented in Zstandard/FSE and LZFSE) built end to end
-    on real text with EXACT integer arithmetic and a machine-checked
-    round trip: characters of the 160-char corpus prefix collapse to
-    a 4-symbol alphabet (space / vowel / consonant / other),
-    frequencies normalize to table size M = 16 by largest-remainder
-    with a deterministic min-1 repair, the symbol spread uses the
-    FSE step 13 (coprime to 16, the (M>>1)+(M>>3)+3 rule), and the
-    first 48 symbols are encoded in reverse through the state machine
-    x ∈ [16, 32): shift out exactly bitlen(x div f) − 1 low bits
-    (closed form, no inner loop), then jump to 16 + slot-of-rank
-    (x' − f) in the symbol's spread positions. The ANS range
-    invariant f ≤ x_small < 2f is pinned per step (range_ok), and
-    DECODE — table lookup, rank inverse, refill to 5 bits — replays
-    forward and must reproduce every original symbol, exhaust the
-    bitstream, and restore the initial state (decode_ok): a full
-    compression round trip proven inside both engines, with the
-    spread table riding through the gate. Engine: driver replay;
-    oracle: two chained scalar-state recursions with LATERAL steps."""
-    docs = (_t(spark, sf_dir, "documents")
-            .select("doc_id", "text").orderBy("doc_id").limit(2)
-            .collect())
-    s = " ".join(r["text"] for r in docs).lower()[:160]
-
-    def klass(ch):
-        if ch == " ":
-            return 0
-        if ch in "aeiou":
-            return 1
-        if "a" <= ch <= "z":
-            return 2
-        return 3
-
-    cl = [klass(ch) for ch in s]
-    cnt = [cl.count(k) for k in range(4)]
-    T = len(cl)
-    base = [c * 16 // T for c in cnt]
-    fr = [(c * 16) % T for c in cnt]
-    rem = 16 - sum(base)
-    f = base[:]
-    for sym in sorted(range(4), key=lambda k: (-fr[k], k))[:rem]:
-        f[sym] += 1
-    zero = [k for k in range(4) if cnt[k] > 0 and f[k] == 0]
-    if zero:
-        big = max(range(4), key=lambda k: (f[k], -k))
-        f[big] -= len(zero)
-        for k in zero:
-            f[k] = 1
-    lo = [sum(f[:k]) for k in range(4)]
-    table = [None] * 16
-    for k in range(16):
-        sym = next(t for t in range(4) if lo[t] <= k < lo[t] + f[t])
-        table[(13 * k) % 16] = sym
-    pos_s = {t: [p for p in range(16) if table[p] == t]
-             for t in range(4)}
-    seq = cl[:48]
-
-    x, bits = 16, ""
-    rows = []
-    for step in range(1, 49):
-        sym = seq[48 - step]
-        fs = f[sym]
-        nb = (x // fs).bit_length() - 1
-        bval = x & ((1 << nb) - 1)
-        for k in range(nb):
-            bits += str((bval >> k) & 1)
-        xs = x >> nb
-        x_new = 16 + pos_s[sym][xs - fs]
-        rows.append((step, 49 - step, sym, fs, x, nb, bval, xs,
-                     x_new, fs <= xs < 2 * fs))
-        x = x_new
-    final_state, total_bits = x, len(bits)
-
-    dx, dbits, ok = final_state, bits, True
-    for j in range(1, 49):
-        slot = dx - 16
-        dsym = table[slot]
-        xs = f[dsym] + pos_s[dsym].index(slot)
-        nb2 = 5 - xs.bit_length()
-        val = 0
-        for k in range(nb2):
-            val += int(dbits[len(dbits) - nb2 + k]) << k
-        dx = (xs << nb2) | val
-        dbits = dbits[:len(dbits) - nb2]
-        ok = ok and dsym == seq[j - 1]
-    decode_ok = ok and dx == 16 and dbits == ""
-    table_str = "".join(str(t) for t in table)
-    out = [(st, pos, sym, fs, xb, nb, bv, xs, xa, rok, final_state,
-            total_bits, decode_ok, table_str)
-           for (st, pos, sym, fs, xb, nb, bv, xs, xa, rok) in rows]
-    return spark.createDataFrame(
-        out, "step int, pos int, symbol int, freq int, x_before long,"
-             " nb_bits int, bits_val long, x_small long, x_after long,"
-             " range_ok boolean, final_state long, total_bits long,"
-             " decode_ok boolean, table_str string")
-
-
-# Toy-RSA constants: n = 61·53 = 3233, φ = 3120, e = 17,
-# d = 17⁻¹ mod 3120 = 2753. Exponents decompose over the fixed
-# squaring chain m^(2^k): 17 = 16+1, 2753 = 2048+512+128+64+1,
-# 3120 = 2048+1024+32+16 — so both directions are straight-line
-# expression chains (11 squarings + a few modular multiplies).
-_RSA_N, _RSA_E, _RSA_D, _RSA_PHI = 3233, 17, 2753, 3120
-
-_RSA_SQL = """
-WITH m0 AS MATERIALIZED (
-  SELECT doc_id,
-         CAST(concat('0x', substr(md5('rsa:'
-              || CAST(doc_id AS VARCHAR)), 1, 8)) AS BIGINT)
-           % 3233 AS m
-  FROM documents
-), sq AS MATERIALIZED (
-  SELECT doc_id, m,
-         m AS s0, m * m % 3233 AS s1
-  FROM m0
-), sq2 AS MATERIALIZED (
-  SELECT *, s1 * s1 % 3233 AS s2 FROM sq
-), sq3 AS MATERIALIZED (SELECT *, s2 * s2 % 3233 AS s3 FROM sq2
-), sq4 AS MATERIALIZED (SELECT *, s3 * s3 % 3233 AS s4 FROM sq3
-), sq5 AS MATERIALIZED (SELECT *, s4 * s4 % 3233 AS s5 FROM sq4
-), sq6 AS MATERIALIZED (SELECT *, s5 * s5 % 3233 AS s6 FROM sq5
-), sq7 AS MATERIALIZED (SELECT *, s6 * s6 % 3233 AS s7 FROM sq6
-), sq8 AS MATERIALIZED (SELECT *, s7 * s7 % 3233 AS s8 FROM sq7
-), sq9 AS MATERIALIZED (SELECT *, s8 * s8 % 3233 AS s9 FROM sq8
-), sq10 AS MATERIALIZED (SELECT *, s9 * s9 % 3233 AS s10 FROM sq9
-), sq11 AS MATERIALIZED (SELECT *, s10 * s10 % 3233 AS s11 FROM sq10
-), enc AS MATERIALIZED (
-  SELECT *, s4 * s0 % 3233 AS c FROM sq11   -- m^17 = m^16 · m
-), csq AS MATERIALIZED (
-  -- the same squaring chain over the ciphertext for decryption
-  SELECT *, c AS t0, c * c % 3233 AS t1 FROM enc
-), csq2 AS MATERIALIZED (SELECT *, t1 * t1 % 3233 AS t2 FROM csq
-), csq3 AS MATERIALIZED (SELECT *, t2 * t2 % 3233 AS t3 FROM csq2
-), csq4 AS MATERIALIZED (SELECT *, t3 * t3 % 3233 AS t4 FROM csq3
-), csq5 AS MATERIALIZED (SELECT *, t4 * t4 % 3233 AS t5 FROM csq4
-), csq6 AS MATERIALIZED (SELECT *, t5 * t5 % 3233 AS t6 FROM csq5
-), csq7 AS MATERIALIZED (SELECT *, t6 * t6 % 3233 AS t7 FROM csq6
-), csq8 AS MATERIALIZED (SELECT *, t7 * t7 % 3233 AS t8 FROM csq7
-), csq9 AS MATERIALIZED (SELECT *, t8 * t8 % 3233 AS t9 FROM csq8
-), csq10 AS MATERIALIZED (SELECT *, t9 * t9 % 3233 AS t10 FROM csq9
-), csq11 AS MATERIALIZED (SELECT *, t10 * t10 % 3233 AS t11 FROM csq10
-), dec AS MATERIALIZED (
-  -- c^2753 = c^2048 · c^512 · c^128 · c^64 · c
-  SELECT *,
-         t11 * t9 % 3233 * t7 % 3233 * t6 % 3233 * t0 % 3233 AS md
-  FROM csq11
-), sig AS MATERIALIZED (
-  -- m^2753 (signature) over the plaintext chain
-  SELECT *,
-         s11 * s9 % 3233 * s7 % 3233 * s6 % 3233 * s0 % 3233 AS sg
-  FROM dec
-), sgsq AS MATERIALIZED (
-  SELECT *, sg AS u0, sg * sg % 3233 AS u1 FROM sig
-), sgsq2 AS MATERIALIZED (SELECT *, u1 * u1 % 3233 AS u2 FROM sgsq
-), sgsq3 AS MATERIALIZED (SELECT *, u2 * u2 % 3233 AS u3 FROM sgsq2
-), sgsq4 AS MATERIALIZED (SELECT *, u3 * u3 % 3233 AS u4 FROM sgsq3
-), fin AS MATERIALIZED (
-  SELECT *,
-         u4 * u0 % 3233 AS sig_pow_e,          -- sg^17
-         s11 * s10 % 3233 * s5 % 3233 * s4 % 3233 AS euler_pow
-  FROM sgsq4                                    -- m^3120
-)
-SELECT doc_id, CAST(m AS BIGINT) AS m, CAST(c AS BIGINT) AS c,
-       CAST(md AS BIGINT) AS m_decrypted,
-       md = m AS roundtrip_ok,
-       CAST(sg AS BIGINT) AS signature,
-       sig_pow_e = m AS signature_ok,
-       m % 61 <> 0 AND m % 53 <> 0 AS coprime,
-       CAST(euler_pow AS BIGINT) AS euler_pow,
-       (m % 61 = 0 OR m % 53 = 0) OR euler_pow = 1 AS euler_ok,
-       CAST(3233 AS INTEGER) AS n_mod,
-       CAST(17 AS INTEGER) AS e_exp, CAST(2753 AS INTEGER) AS d_exp
-FROM fin
-"""
-
-
-@register("q_docs_rsa_roundtrip", _RSA_SQL)
-def q_docs_rsa_roundtrip(spark, sf_dir):
-    """Textbook RSA as a MAP-SIDE EXPRESSION PIPELINE — no loops, no
-    UDFs, no replay: because the exponents are fixed (e = 17,
-    d = 2753, φ = 3120 for n = 61·53), square-and-multiply unrolls
-    into a straight-line chain of eleven modular squarings plus a few
-    multiplies, pure whole-stage-codegen arithmetic applied to every
-    document's md5-derived residue simultaneously (intermediates
-    < 3233² ≈ 10⁷, exact in int64). Three theorems are pinned per
-    document: RSA round-trip (m^e)^d ≡ m for EVERY residue —
-    including the non-coprime m where the naive Euler argument fails
-    and the CRT argument is what actually proves it (coprime is
-    emitted so the gate shows both populations) — signature
-    commutativity (m^d)^e ≡ m, and Euler's theorem proper m^φ ≡ 1
-    pinned only where gcd(m, n) = 1. This is the shape of bulk
-    crypto over 10⁹ rows: fixed-exponent modpow compiles to
-    branch-free vectorized arithmetic, the engine and DuckDB agree
-    cell-for-cell."""
-    n = _RSA_N
-    df = _t(spark, sf_dir, "documents").select(
-        "doc_id",
-        (F.conv(F.substring(F.md5(F.concat(
-            F.lit("rsa:"), F.col("doc_id").cast("string"))), 1, 8),
-            16, 10).cast("long") % n).alias("m"))
-    # each squaring lands in a NAMED column so downstream references
-    # share it — an inline expression list would duplicate the whole
-    # subtree at every use (2^k nodes by s11) and choke codegen
-    df = df.withColumn("s0", F.col("m"))
-    for k in range(1, 12):
-        df = df.withColumn(f"s{k}",
-                           F.col(f"s{k-1}") * F.col(f"s{k-1}") % n)
-    df = df.withColumn("c", F.col("s4") * F.col("s0") % n)  # m^17
-    df = df.withColumn("t0", F.col("c"))
-    for k in range(1, 12):
-        df = df.withColumn(f"t{k}",
-                           F.col(f"t{k-1}") * F.col(f"t{k-1}") % n)
-    df = (df.withColumn("md", F.col("t11") * F.col("t9") % n
-                        * F.col("t7") % n * F.col("t6") % n
-                        * F.col("t0") % n)            # c^2753
-          .withColumn("sg", F.col("s11") * F.col("s9") % n
-                      * F.col("s7") % n * F.col("s6") % n
-                      * F.col("s0") % n))             # m^2753
-    df = df.withColumn("u0", F.col("sg"))
-    for k in range(1, 5):
-        df = df.withColumn(f"u{k}",
-                           F.col(f"u{k-1}") * F.col(f"u{k-1}") % n)
-    sig_pow_e = F.col("u4") * F.col("u0") % n        # sg^17
-    euler_pow = (F.col("s11") * F.col("s10") % n
-                 * F.col("s5") % n * F.col("s4") % n)  # m^3120
-    return df.select(
-        "doc_id", F.col("m").cast("long").alias("m"),
-        F.col("c").cast("long").alias("c"),
-        F.col("md").cast("long").alias("m_decrypted"),
-        (F.col("md") == F.col("m")).alias("roundtrip_ok"),
-        F.col("sg").cast("long").alias("signature"),
-        (sig_pow_e == F.col("m")).alias("signature_ok"),
-        ((F.col("m") % 61 != 0) & (F.col("m") % 53 != 0))
-        .alias("coprime"),
-        euler_pow.cast("long").alias("euler_pow"),
-        ((F.col("m") % 61 == 0) | (F.col("m") % 53 == 0)
-         | (euler_pow == 1)).alias("euler_ok"),
-        F.lit(n).cast("int").alias("n_mod"),
-        F.lit(_RSA_E).cast("int").alias("e_exp"),
-        F.lit(_RSA_D).cast("int").alias("d_exp"))
-
-
-_EXTHASH_SQL = """
-WITH RECURSIVE keys0 AS (
-  SELECT list(CAST(concat('0x', substr(md5('eh:'
-           || CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT)
-           ORDER BY doc_id) AS ks
-  FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 32)
-), st AS (
-  SELECT 0 AS step, k0.ks, 0 AS d,
-         [CAST(1 AS BIGINT)] AS dir,
-         [CAST([] AS BIGINT[])] AS bk,
-         [CAST(0 AS BIGINT)] AS bd,
-         1 AS nextk, 0 AS nsplits
-  FROM keys0 k0
-  UNION ALL
-  SELECT s.step + 1, s.ks,
-         CASE WHEN q.cnt < 4 THEN s.d
-              WHEN q.l = s.d THEN s.d + 1 ELSE s.d END,
-         CASE WHEN q.cnt < 4 THEN s.dir
-              ELSE list_transform(
-                range(1, CASE WHEN q.l = s.d
-                              THEN 2 * len(s.dir) ELSE len(s.dir)
-                         END + 1),
-                j -> CASE WHEN (CASE WHEN q.l = s.d
-                                THEN (s.dir || s.dir)[j]
-                                ELSE s.dir[j] END) = q.b
-                          AND ((j - 1) >> q.l) & 1 = 1
-                     THEN CAST(len(s.bk) + 1 AS BIGINT)
-                     ELSE CASE WHEN q.l = s.d
-                          THEN (s.dir || s.dir)[j]
-                          ELSE s.dir[j] END END) END,
-         CASE WHEN q.cnt < 4 THEN
-           list_transform(range(1, len(s.bk) + 1), i ->
-             CASE WHEN i = q.b THEN list_append(s.bk[i], q.k)
-                  ELSE s.bk[i] END)
-         ELSE list_append(
-           list_transform(range(1, len(s.bk) + 1), i ->
-             CASE WHEN i = q.b
-                  THEN list_filter(s.bk[i],
-                                   x -> ((x >> q.l) & 1) = 0)
-                  ELSE s.bk[i] END),
-           list_filter(s.bk[q.b], x -> ((x >> q.l) & 1) = 1)) END,
-         CASE WHEN q.cnt < 4 THEN s.bd
-         ELSE list_append(
-           list_transform(range(1, len(s.bd) + 1), i ->
-             CASE WHEN i = q.b THEN q.l + 1 ELSE s.bd[i] END),
-           q.l + 1) END,
-         CASE WHEN q.cnt < 4 THEN s.nextk + 1 ELSE s.nextk END,
-         CASE WHEN q.cnt < 4 THEN s.nsplits ELSE s.nsplits + 1 END
-  FROM st s, LATERAL (
-    SELECT s.ks[s.nextk] AS k,
-           s.dir[(s.ks[s.nextk] & ((CAST(1 AS BIGINT) << s.d) - 1))
-                 + 1] AS b,
-           len(s.bk[s.dir[(s.ks[s.nextk]
-                & ((CAST(1 AS BIGINT) << s.d) - 1)) + 1]]) AS cnt,
-           s.bd[s.dir[(s.ks[s.nextk]
-                & ((CAST(1 AS BIGINT) << s.d) - 1)) + 1]] AS l
-  ) q
-  WHERE s.nextk <= 32 AND s.step < 200
-), fin AS (
-  SELECT * FROM st ORDER BY step DESC LIMIT 1
-), bkt AS (
-  SELECT CAST(i.i AS INTEGER) AS bucket, f.d, f.dir, f.bk, f.bd,
-         f.nsplits, f.step,
-         len(f.bk[i.i]) AS n_keys,
-         f.bd[i.i] AS local_depth,
-         len(list_filter(f.dir, x -> x = i.i)) AS n_ptrs
-  FROM fin f, LATERAL (
-    SELECT unnest(range(1, len(f.bk) + 1)) AS i) i
-)
-SELECT b.bucket,
-       CAST(b.local_depth AS INTEGER) AS local_depth,
-       CAST(b.n_keys AS INTEGER) AS n_keys,
-       b.n_keys <= 4 AS capacity_ok,
-       CAST(b.n_ptrs AS INTEGER) AS n_dir_ptrs,
-       b.n_ptrs = (CAST(1 AS BIGINT) << CAST(b.d - b.local_depth
-                                             AS INTEGER))
-         AS ptrs_ok,
-       len(list_distinct(list_transform(b.bk[b.bucket],
-           x -> x & ((CAST(1 AS BIGINT) << CAST(b.local_depth
-                                                AS INTEGER)) - 1))))
-         <= 1 AS prefix_ok,
-       coalesce(list_aggregate(list_transform(b.bk[b.bucket],
-           x -> b.dir[(x & ((CAST(1 AS BIGINT) << b.d) - 1)) + 1]
-                = b.bucket), 'bool_and'), TRUE) AS addressed_ok,
-       CAST(b.d AS INTEGER) AS global_depth,
-       CAST(len(b.dir) AS INTEGER) AS dir_size,
-       CAST(b.nsplits AS INTEGER) AS n_splits,
-       CAST(b.step AS INTEGER) AS n_steps,
-       CAST((SELECT sum(len(x.b2)) FROM (
-               SELECT unnest(f2.bk) AS b2 FROM fin f2) x)
-            AS INTEGER) AS total_keys
-FROM bkt b
-"""
-
-
-@register("q_docs_extendible_hashing", _EXTHASH_SQL)
-def q_docs_extendible_hashing(spark, sf_dir):
-    """Extendible hashing (Fagin-Nievergelt-Pippenger-Strong 1979 —
-    the directory-doubling dynamic hash index of classical database
-    storage, completing the storage-engine suite beside the B+-tree
-    bulk load, LSM duel, cuckoo filter and learned index): 32
-    md5-derived 48-bit document keys are inserted into capacity-4
-    buckets addressed by their LOW global-depth bits, with the
-    textbook state machine replayed one ACTION per step — an insert
-    when the target bucket has room, otherwise a split (directory
-    doubles first when local depth equals global depth; the bucket's
-    keys redistribute on bit l; exactly the directory entries
-    pointing at the old bucket with bit l set are rewired) and the
-    key retried, so cascading splits are handled naturally. Every
-    defining invariant is pinned per bucket from the final state:
-    occupancy ≤ 4, each bucket referenced by exactly 2^(d−l)
-    aligned directory entries (ptrs_ok), all its keys agreeing on
-    their low-l bits (prefix_ok), every key addressable through the
-    directory (addressed_ok), and key conservation. Engine: driver
-    replay; oracle: a recursive CTE whose state is the directory,
-    the nested bucket-contents list, and the local-depth list."""
-    docs = (_t(spark, sf_dir, "documents").select("doc_id")
-            .orderBy("doc_id").limit(32).collect())
-    import hashlib as _hl
-    ks = [int(_hl.md5(f"eh:{r['doc_id']}".encode())
-              .hexdigest()[:12], 16) for r in docs]
-    d, dirv, bk, bd = 0, [1], [[]], [0]
-    nextk, nsplits, step = 1, 0, 0
-    while nextk <= 32 and step < 200:
-        step += 1
-        k = ks[nextk - 1]
-        b = dirv[k & ((1 << d) - 1)]
-        if len(bk[b - 1]) < 4:
-            bk[b - 1] = bk[b - 1] + [k]
-            nextk += 1
-        else:
-            l = bd[b - 1]
-            if l == d:
-                dirv = dirv + dirv
-                d += 1
-            nb = len(bk) + 1
-            stay = [x for x in bk[b - 1] if not (x >> l) & 1]
-            move = [x for x in bk[b - 1] if (x >> l) & 1]
-            bk[b - 1] = stay
-            bk.append(move)
-            bd[b - 1] = l + 1
-            bd.append(l + 1)
-            dirv = [nb if (dirv[j] == b and (j >> l) & 1) else dirv[j]
-                    for j in range(len(dirv))]
-            nsplits += 1
-    total = sum(len(x) for x in bk)
-    out = []
-    for i in range(1, len(bk) + 1):
-        keys_i, l = bk[i - 1], bd[i - 1]
-        nptr = sum(1 for x in dirv if x == i)
-        prefix_ok = len({x & ((1 << l) - 1) for x in keys_i}) <= 1
-        addressed = all(dirv[x & ((1 << d) - 1)] == i for x in keys_i)
-        out.append((i, l, len(keys_i), len(keys_i) <= 4, nptr,
-                    nptr == (1 << (d - l)), prefix_ok, addressed,
-                    d, len(dirv), nsplits, step, total))
-    return spark.createDataFrame(
-        out, "bucket int, local_depth int, n_keys int,"
-             " capacity_ok boolean, n_dir_ptrs int, ptrs_ok boolean,"
-             " prefix_ok boolean, addressed_ok boolean,"
-             " global_depth int, dir_size int, n_splits int,"
-             " n_steps int, total_keys int")
-
-
-_JOSEPHUS_SQL = """
-WITH RECURSIVE nn AS (
-  SELECT CAST(count(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n,
-         1 + CAST(concat('0x', substr(md5('jos:'
-             || CAST(count(*) AS VARCHAR)), 1, 6)) AS BIGINT) % 7
-           AS k
-  FROM events
-), rec(m, j) AS (
-  SELECT CAST(1 AS BIGINT), CAST(0 AS BIGINT)
-  UNION ALL
-  SELECT r.m + 1, (r.j + (SELECT k FROM nn)) % (r.m + 1)
-  FROM rec r WHERE r.m < (SELECT n FROM nn)
-), sim(round, circle, victim) AS (
-  SELECT CAST(0 AS BIGINT),
-         (SELECT list_transform(range(0, n), x -> x) FROM nn),
-         CAST(NULL AS BIGINT)
-  UNION ALL
-  SELECT s.round + 1,
-         list_concat(
-           s.circle[CAST(((SELECT k FROM nn) - 1)
-                    % len(s.circle) + 2 AS INTEGER):],
-           s.circle[:CAST(((SELECT k FROM nn) - 1)
-                    % len(s.circle) AS INTEGER)]),
-         s.circle[CAST(((SELECT k FROM nn) - 1)
-                  % len(s.circle) + 1 AS INTEGER)]
-  FROM sim s WHERE len(s.circle) > 1
-), surv AS (
-  SELECT circle[1] AS survivor_sim, round AS rounds_done
-  FROM sim ORDER BY round DESC LIMIT 1
-), jn AS (
-  SELECT j AS survivor_rec FROM rec
-  WHERE m = (SELECT n FROM nn)
-)
-SELECT CAST(r.m AS INTEGER) AS m,
-       CAST(r.j AS BIGINT) AS j_m,
-       CAST(s.victim AS BIGINT) AS eliminated_at_round,
-       CAST(v.survivor_sim AS BIGINT) AS survivor_sim,
-       CAST(j2.survivor_rec AS BIGINT) AS survivor_rec,
-       v.survivor_sim = j2.survivor_rec AS agree,
-       CAST((SELECT n FROM nn) AS INTEGER) AS n,
-       CAST((SELECT k FROM nn) AS INTEGER) AS k
-FROM rec r
-LEFT JOIN sim s ON s.round = r.m AND s.victim IS NOT NULL
-CROSS JOIN surv v CROSS JOIN jn j2
-"""
-
-
-@register("q_events_josephus", _JOSEPHUS_SQL)
-def q_events_josephus(spark, sf_dir):
-    """The Josephus problem solved TWICE and forced to agree: the
-    O(n) recurrence J(1)=0, J(m) = (J(m−1)+k) mod m — the closed
-    recursive form — against a LITERAL circle simulation that rotates
-    a survivor list and eliminates every k-th person, with n = the
-    number of distinct event days and k md5-derived from the event
-    count (both data-dependent). Gate hash-equality machine-checks
-    the classic renumbering argument behind the recurrence on this
-    instance: every row carries J(m) for its prefix size AND the
-    person eliminated at that round, and the final survivor from both
-    methods is pinned equal (agree). Engine: driver replay of both;
-    oracle: a scalar recursion for J and a list-rotation recursion
-    for the circle."""
-    row = (_t(spark, sf_dir, "events")
-           .agg(F.countDistinct(F.col("ts").cast("date")).alias("n"),
-                F.count(F.lit(1)).alias("c")).collect()[0])
-    n = int(row["n"])
-    import hashlib as _hl
-    k = 1 + int(_hl.md5(f"jos:{int(row['c'])}".encode())
-                .hexdigest()[:6], 16) % 7
-    j = [0, 0]
-    for m in range(2, n + 1):
-        j.append((j[-1] + k) % m)
-    circle = list(range(n))
-    victims = []
-    while len(circle) > 1:
-        idx = (k - 1) % len(circle)
-        victims.append(circle[idx])
-        circle = circle[idx + 1:] + circle[:idx]
-    survivor_sim, survivor_rec = circle[0], j[n]
-    out = []
-    for m in range(1, n + 1):
-        victim = victims[m - 1] if m <= len(victims) else None
-        out.append((m, j[m], victim, survivor_sim, survivor_rec,
-                    survivor_sim == survivor_rec, n, k))
-    return spark.createDataFrame(
-        out, "m int, j_m long, eliminated_at_round long,"
-             " survivor_sim long, survivor_rec long, agree boolean,"
-             " n int, k int")
-
-
-# Functional graph for rho cycle detection: f(x) = md5('rho:'||x)
-# truncated to 32 bits, mod 256 — a pseudo-random self-map on 256
-# states, so mu + lambda <= 257 by pigeonhole and 300 steps suffice.
-_RHO_F_SQL = ("CAST(concat('0x', substr(md5('rho:' || CAST({x} AS"
-              " VARCHAR)), 1, 8)) AS BIGINT) % 256")
-
-_RHO_SQL = f"""
-WITH RECURSIVE seed AS (
-  SELECT CAST(concat('0x', substr(md5('rhoseed:'
-           || CAST(CAST(sum(n_chars) AS BIGINT) AS VARCHAR)), 1, 8))
-           AS BIGINT) % 256 AS x0
-  FROM documents
-), traj(i, x) AS (
-  SELECT CAST(0 AS BIGINT), (SELECT x0 FROM seed)
-  UNION ALL
-  SELECT t.i + 1, {_RHO_F_SQL.format(x="t.x")}
-  FROM traj t WHERE t.i < 300
-), firstrep AS (
-  SELECT min(b.i) AS r
-  FROM traj a JOIN traj b ON a.x = b.x AND a.i < b.i
-), rho AS (
-  SELECT (SELECT min(a.i) FROM traj a JOIN traj b
-          ON a.x = b.x AND b.i = (SELECT r FROM firstrep)) AS mu,
-         (SELECT r FROM firstrep)
-           - (SELECT min(a.i) FROM traj a JOIN traj b
-              ON a.x = b.x AND b.i = (SELECT r FROM firstrep))
-           AS lam
-), floyd1(i, t, h) AS (
-  SELECT CAST(0 AS BIGINT), (SELECT x0 FROM seed),
-         (SELECT x0 FROM seed)
-  UNION ALL
-  SELECT f.i + 1, {_RHO_F_SQL.format(x="f.t")},
-         {_RHO_F_SQL.format(
-             x=_RHO_F_SQL.format(x="f.h"))}
-  FROM floyd1 f
-  WHERE f.i < 600 AND (f.i = 0 OR f.t <> f.h)
-), meet AS (
-  SELECT t AS meet_x, i AS meet_i FROM floyd1
-  ORDER BY i DESC LIMIT 1
-), floyd2(i, a, b) AS (
-  SELECT CAST(0 AS BIGINT), (SELECT x0 FROM seed),
-         (SELECT meet_x FROM meet)
-  UNION ALL
-  SELECT f.i + 1, {_RHO_F_SQL.format(x="f.a")},
-         {_RHO_F_SQL.format(x="f.b")}
-  FROM floyd2 f WHERE f.i < 600 AND f.a <> f.b
-), fmu AS (
-  SELECT i AS floyd_mu, a AS cycle_entry FROM floyd2
-  ORDER BY i DESC LIMIT 1
-), floyd3(i, y) AS (
-  SELECT CAST(1 AS BIGINT),
-         {_RHO_F_SQL.format(x="(SELECT cycle_entry FROM fmu)")}
-  UNION ALL
-  SELECT f.i + 1, {_RHO_F_SQL.format(x="f.y")}
-  FROM floyd3 f
-  WHERE f.i < 600 AND f.y <> (SELECT cycle_entry FROM fmu)
-), flam AS (
-  SELECT i AS floyd_lam FROM floyd3 ORDER BY i DESC LIMIT 1
-), brent(i, power, lam, tort, hare) AS (
-  SELECT CAST(1 AS BIGINT), CAST(1 AS BIGINT), CAST(1 AS BIGINT),
-         (SELECT x0 FROM seed),
-         {_RHO_F_SQL.format(x="(SELECT x0 FROM seed)")}
-  UNION ALL
-  SELECT b.i + 1,
-         CASE WHEN b.power = b.lam THEN 2 * b.power ELSE b.power END,
-         CASE WHEN b.power = b.lam THEN 1 ELSE b.lam + 1 END,
-         CASE WHEN b.power = b.lam THEN b.hare ELSE b.tort END,
-         {_RHO_F_SQL.format(x="b.hare")}
-  FROM brent b WHERE b.i < 1200 AND b.tort <> b.hare
-), blam AS (
-  SELECT lam AS brent_lam FROM brent ORDER BY i DESC LIMIT 1
-), divs AS (
-  SELECT CAST(unnest(range(1, 257)) AS BIGINT) AS d
-), minimal AS (
-  SELECT coalesce(bool_and(ta.x <> tb.x), TRUE) AS lam_minimal
-  FROM divs dv
-  JOIN rho ON dv.d < rho.lam AND rho.lam % dv.d = 0
-  JOIN traj ta ON ta.i = rho.mu
-  JOIN traj tb ON tb.i = rho.mu + dv.d
-)
-SELECT CAST(t.i AS INTEGER) AS i, CAST(t.x AS BIGINT) AS x,
-       t.i = r.mu AS is_cycle_entry,
-       t.i >= r.mu AS in_cycle,
-       CAST(r.mu AS BIGINT) AS mu, CAST(r.lam AS BIGINT) AS lambda,
-       CAST(f.floyd_mu AS BIGINT) AS floyd_mu,
-       CAST(l.floyd_lam AS BIGINT) AS floyd_lambda,
-       CAST(bl.brent_lam AS BIGINT) AS brent_lambda,
-       f.floyd_mu = r.mu AND l.floyd_lam = r.lam
-         AND bl.brent_lam = r.lam AS all_agree,
-       m.lam_minimal,
-       CAST((SELECT x0 FROM seed) AS BIGINT) AS seed
-FROM traj t CROSS JOIN rho r CROSS JOIN fmu f CROSS JOIN flam l
-CROSS JOIN blam bl CROSS JOIN minimal m
-WHERE t.i <= r.mu + r.lam
-"""
-
-
-@register("q_docs_rho_cycle", _RHO_SQL)
-def q_docs_rho_cycle(spark, sf_dir):
-    """Cycle detection in a functional graph — the rho structure
-    behind Pollard's factoring and hash-cycle analysis — solved THREE
-    ways and forced to agree: the DEFINITION (iterate f until the
-    first repeated value; mu = first occurrence, lambda = gap),
-    FLOYD's tortoise-and-hare (meet inside the cycle, then the
-    equal-speed second phase whose meeting point is provably the
-    cycle entry, then one lap for lambda), and BRENT's
-    power-of-two-teleport variant (lambda found directly from the
-    checkpoint distance). f is an md5 self-map on 256 states, the
-    seed is data-derived from total corpus characters, so the rho
-    shape itself is data-dependent; pigeonhole bounds every replay.
-    The emitted trajectory covers exactly mu + lambda + 1 steps with
-    the cycle entry flagged, all three (mu, lambda) pairs are pinned
-    equal (all_agree — the correctness arguments of both algorithms,
-    machine-checked), and lambda's MINIMALITY is pinned by testing
-    every proper divisor against the trajectory (lam_minimal).
-    Engine: driver replay of all three; oracle: four scalar-state
-    recursions plus a divisor join."""
-    import hashlib as _hl
-
-    def f(x):
-        return int(_hl.md5(f"rho:{x}".encode()).hexdigest()[:8],
-                   16) % 256
-
-    tot = int(_t(spark, sf_dir, "documents")
-              .agg(F.sum("n_chars").alias("s")).collect()[0]["s"])
-    x0 = int(_hl.md5(f"rhoseed:{tot}".encode()).hexdigest()[:8],
-             16) % 256
-    traj = [x0]
-    seen = {}
-    i = 0
-    while traj[i] not in seen:
-        seen[traj[i]] = i
-        traj.append(f(traj[i]))
-        i += 1
-    mu = seen[traj[i]]
-    lam = i - mu
-    # Floyd
-    t = h = x0
-    while True:
-        t, h = f(t), f(f(h))
-        if t == h:
-            break
-    a, b = x0, t
-    floyd_mu = 0
-    while a != b:
-        a, b = f(a), f(b)
-        floyd_mu += 1
-    floyd_lam = 1
-    y = f(a)
-    while y != a:
-        y = f(y)
-        floyd_lam += 1
-    # Brent
-    power = blam = 1
-    tort, hare = x0, f(x0)
-    while tort != hare:
-        if power == blam:
-            tort = hare
-            power *= 2
-            blam = 0
-        hare = f(hare)
-        blam += 1
-    all_agree = floyd_mu == mu and floyd_lam == lam and blam == lam
-    lam_minimal = all(traj[mu] != traj[mu + d]
-                      for d in range(1, lam)
-                      if lam % d == 0)
-    out = [(j, traj[j], j == mu, j >= mu, mu, lam, floyd_mu,
-            floyd_lam, blam, all_agree, lam_minimal, x0)
-           for j in range(mu + lam + 1)]
-    return spark.createDataFrame(
-        out, "i int, x long, is_cycle_entry boolean,"
-             " in_cycle boolean, mu long, lambda long, floyd_mu long,"
-             " floyd_lambda long, brent_lambda long,"
-             " all_agree boolean, lam_minimal boolean, seed long")
-
-
-_NASH_SQL = """
-WITH vc AS (
-  SELECT CAST(round(median(CASE WHEN event_type = 'purchase'
-                    THEN value END) * 100) AS BIGINT) AS v,
-         CAST(round(median(CASE WHEN event_type = 'error'
-                    THEN value END) * 100) AS BIGINT) AS c
-  FROM events
-), pay AS (
-  -- Hawk-Dove in DOUBLED cents so (V-C)/2 and V/2 stay integral:
-  -- row player's payoff a, column player's payoff b per cell
-  SELECT * FROM (
-    SELECT 'HH' AS cell, 1 AS ri, 1 AS ci,
-           v - c AS a, v - c AS b FROM vc
-    UNION ALL SELECT 'HD', 1, 2, 2 * v, 0 FROM vc
-    UNION ALL SELECT 'DH', 2, 1, 0, 2 * v FROM vc
-    UNION ALL SELECT 'DD', 2, 2, v, v FROM vc)
-), ne AS (
-  SELECT p.cell, p.ri, p.ci, p.a, p.b,
-         p.a >= (SELECT a FROM pay q
-                 WHERE q.ci = p.ci AND q.ri = 3 - p.ri)
-           AS row_br,
-         p.b >= (SELECT b FROM pay q
-                 WHERE q.ri = p.ri AND q.ci = 3 - p.ci)
-           AS col_br
-  FROM pay p
-), mixed AS (
-  -- indifference mix p* = V/C (prob. of Hawk) when C > V: pinned by
-  -- the exact cross-multiplied identity 2C·EU_H = 2C·EU_D:
-  --   p(V−C) + (1−p)·2V = (1−p)·V  with p = V/C
-  --   ⟺ V(V−C) + (C−V)·2V = (C−V)·V   (multiply by C)
-  SELECT v, c, v AS p_num, c AS p_den,
-         v * (v - c) + (c - v) * 2 * v = (c - v) * v
-           AS indifference_ok,
-         c > v AS hawk_dove_regime
-  FROM vc
-)
-SELECT n.cell, CAST(n.a AS BIGINT) AS pay_row,
-       CAST(n.b AS BIGINT) AS pay_col,
-       n.row_br, n.col_br,
-       n.row_br AND n.col_br AS is_pure_ne,
-       CAST(m.v AS BIGINT) AS v_cents, CAST(m.c AS BIGINT) AS c_cents,
-       CAST(m.p_num AS BIGINT) AS pstar_num,
-       CAST(m.p_den AS BIGINT) AS pstar_den,
-       m.indifference_ok, m.hawk_dove_regime,
-       NOT m.hawk_dove_regime
-         OR ((SELECT count(*) FROM ne n2
-              WHERE n2.row_br AND n2.col_br AND n2.ri <> n2.ci) = 2
-             AND (SELECT count(*) FROM ne n3
-                  WHERE n3.row_br AND n3.col_br AND n3.ri = n3.ci)
-                 = 0) AS anticoordination_ok
-FROM ne n CROSS JOIN mixed m
-"""
-
-
-@register("q_events_nash_hawk_dove", _NASH_SQL)
-def q_events_nash_hawk_dove(spark, sf_dir):
-    """Nash equilibrium of a Hawk-Dove game whose stakes come from the
-    data — resource V = median purchase value, fight cost C = median
-    error value, both in exact doubled cents so every payoff
-    ((V−C)/2, V, V/2 …) is an integer. All four cells are tested for
-    the pure-equilibrium property by literal best-response comparison
-    (row_br / col_br: no profitable unilateral deviation), the classic
-    anticoordination structure is pinned for the C > V regime
-    (exactly the two off-diagonal pure equilibria, none on the
-    diagonal), and the mixed equilibrium p* = V/C is pinned by the
-    EXACT cross-multiplied indifference identity V(V−C) + (C−V)·2V =
-    (C−V)·V — no floats decide anything; the rational p* ships as a
-    numerator/denominator pair. Completes the game-theory family
-    (Banzhaf, Shapley, Condorcet, Bradley-Terry, secretary, bandits)
-    with the equilibrium concept itself. One median aggregate is the
-    only data-sized stage."""
-    vc = (_t(spark, sf_dir, "events")
-          .agg(F.round(F.expr(
-              "median(CASE WHEN event_type = 'purchase'"
-              " THEN value END)") * 100).cast("long").alias("v"),
-              F.round(F.expr(
-                  "median(CASE WHEN event_type = 'error'"
-                  " THEN value END)") * 100).cast("long").alias("c"))
-          .collect()[0])
-    v, c = int(vc["v"]), int(vc["c"])
-    pay = {("HH"): (1, 1, v - c, v - c), ("HD"): (1, 2, 2 * v, 0),
-           ("DH"): (2, 1, 0, 2 * v), ("DD"): (2, 2, v, v)}
-    by_pos = {(ri, ci): (a, b) for (ri, ci, a, b) in pay.values()}
-    p_num, p_den = v, c
-    indiff = v * (v - c) + (c - v) * 2 * v == (c - v) * v
-    hd = c > v
-    cells = {}
-    for cell, (ri, ci, a, b) in pay.items():
-        row_br = a >= by_pos[(3 - ri, ci)][0]
-        col_br = b >= by_pos[(ri, 3 - ci)][1]
-        cells[cell] = (ri, ci, a, b, row_br, col_br)
-    pure_off = sum(1 for (ri, ci, _, _, rb, cb) in cells.values()
-                   if rb and cb and ri != ci)
-    pure_diag = sum(1 for (ri, ci, _, _, rb, cb) in cells.values()
-                    if rb and cb and ri == ci)
-    anti_ok = (not hd) or (pure_off == 2 and pure_diag == 0)
-    out = [(cell, a, b, rb, cb, rb and cb, v, c, p_num, p_den,
-            indiff, hd, anti_ok)
-           for cell, (ri, ci, a, b, rb, cb) in cells.items()]
-    return spark.createDataFrame(
-        out, "cell string, pay_row long, pay_col long,"
-             " row_br boolean, col_br boolean, is_pure_ne boolean,"
-             " v_cents long, c_cents long, pstar_num long,"
-             " pstar_den long, indifference_ok boolean,"
-             " hawk_dove_regime boolean, anticoordination_ok boolean")
-
-
-_ZECKENDORF_SQL = """
-WITH RECURSIVE fib0(k, f, fprev) AS (
-  -- Zeckendorf index convention: F_1 = 1, F_2 = 2, F_3 = 3, F_4 = 5
-  SELECT 1, CAST(1 AS BIGINT), CAST(1 AS BIGINT)
-  UNION ALL
-  SELECT k + 1, f + fprev, f FROM fib0 WHERE k < 40
-), fib AS (
-  SELECT k, f FROM fib0
-), vals AS (
-  SELECT o_orderkey AS okey,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS val
-  FROM (SELECT * FROM orders ORDER BY o_orderkey LIMIT 20)
-), greedy(okey, val, step, rem, k, f) AS (
-  SELECT v.okey, v.val, 0, v.val, CAST(NULL AS INTEGER),
-         CAST(NULL AS BIGINT)
-  FROM vals v
-  UNION ALL
-  SELECT g.okey, g.val, g.step + 1, g.rem - q.f, q.k, q.f
-  FROM greedy g, LATERAL (
-    SELECT fb.k, fb.f FROM fib fb
-    WHERE fb.f <= g.rem ORDER BY fb.f DESC LIMIT 1
-  ) q
-  WHERE g.rem > 0 AND g.step < 40
-), picks AS (
-  SELECT okey, val, step, k, f, rem,
-         lag(k) OVER (PARTITION BY okey ORDER BY step) AS prev_k
-  FROM greedy WHERE step > 0
-), chk AS (
-  SELECT okey, sum(f) AS tot, count(*) AS n_terms,
-         bool_and(prev_k IS NULL OR prev_k - k >= 2)
-           AS non_consecutive_ok,
-         bool_and(rem = 0 OR rem < (SELECT f2.f FROM fib f2
-                                    WHERE f2.k = picks.k - 1))
-           AS greedy_invariant_ok
-  FROM picks GROUP BY okey
-)
-SELECT CAST(p.okey AS BIGINT) AS okey,
-       CAST(p.val AS BIGINT) AS val,
-       CAST(p.step AS INTEGER) AS step,
-       CAST(p.k AS INTEGER) AS fib_index,
-       CAST(p.f AS BIGINT) AS fib_value,
-       CAST(p.rem AS BIGINT) AS remainder_after,
-       c.non_consecutive_ok,
-       c.greedy_invariant_ok,
-       c.tot = p.val AS reconstruction_ok,
-       CAST(c.n_terms AS INTEGER) AS n_terms
-FROM picks p JOIN chk c USING (okey)
-"""
-
-
-@register("q_orders_zeckendorf", _ZECKENDORF_SQL)
-def q_orders_zeckendorf(spark, sf_dir):
-    """Zeckendorf's theorem made machine-checkable: every one of the
-    first 20 order prices (exact cents) decomposes by the greedy
-    largest-Fibonacci-first algorithm, and the THREE properties the
-    theorem asserts are pinned per order — the chosen Fibonacci
-    numbers sum back to the value exactly (reconstruction_ok), no two
-    chosen indices are consecutive (non_consecutive_ok — the defining
-    Zeckendorf condition, which holds precisely BECAUSE of the third
-    pin), and the greedy invariant that forces it: after taking F_k
-    the remainder is < F_{k−1} (greedy_invariant_ok), so F_{k−1} can
-    never be the next pick. Uniqueness of the non-consecutive
-    representation follows from these pinned facts by the standard
-    induction. Engine: driver fold per value; oracle: a per-order
-    scalar recursion where all 20 orders advance through the
-    recursive CTE simultaneously — the row-parallel replay shape —
-    with the Fibonacci table itself built by a window recursion."""
-    import hashlib as _hl  # noqa: F401  (parity with sibling replays)
-    rows = (_t(spark, sf_dir, "orders")
-            .orderBy("o_orderkey").limit(20)
-            .select("o_orderkey",
-                    F.round(F.col("o_totalprice") * 100).cast("long")
-                    .alias("val")).collect())
-    fib = [1, 2]
-    while len(fib) < 40:
-        fib.append(fib[-1] + fib[-2])
-    out = []
-    for r in rows:
-        okey, val = int(r["o_orderkey"]), int(r["val"])
-        rem, step, prev_k, picks = val, 0, None, []
-        while rem > 0 and step < 40:
-            step += 1
-            k = max(i for i in range(len(fib)) if fib[i] <= rem) + 1
-            f = fib[k - 1]
-            rem -= f
-            picks.append((step, k, f, rem, prev_k))
-            prev_k = k
-        tot = sum(p[2] for p in picks)
-        ncons = all(pk is None or pk - k >= 2
-                    for (_, k, _, _, pk) in picks)
-        ginv = all(rm == 0 or (k >= 2 and rm < fib[k - 2])
-                   for (_, k, _, rm, _) in picks)
-        for (st, k, f, rm, _) in picks:
-            out.append((okey, val, st, k, f, rm, ncons, ginv,
-                        tot == val, len(picks)))
-    return spark.createDataFrame(
-        out, "okey long, val long, step int, fib_index int,"
-             " fib_value long, remainder_after long,"
-             " non_consecutive_ok boolean,"
-             " greedy_invariant_ok boolean, reconstruction_ok boolean,"
-             " n_terms int")
-
-
-_SKIPLIST_SQL = """
-WITH keys AS (
-  SELECT CAST(concat('0x', substr(md5('sk:'
-           || CAST(doc_id AS VARCHAR)), 1, 12)) AS BIGINT) AS k
-  FROM (SELECT doc_id FROM documents ORDER BY doc_id LIMIT 64)
-), lvls AS (
-  SELECT k,
-         1 + least(4, length(bin(k & -k)) - 1) AS lvl
-  FROM keys
-), lmax AS (
-  SELECT max(lvl) AS lm FROM lvls
-), probes AS (
-  SELECT CAST(j.j AS INTEGER) AS pid,
-         CAST(concat('0x', substr(md5('skq:'
-           || CAST(j.j AS VARCHAR)), 1, 12)) AS BIGINT) AS q
-  FROM (SELECT unnest(range(1, 9)) AS j) j
-), walk AS (
-  SELECT p.pid, p.q, CAST(l.l AS INTEGER) AS level,
-         coalesce((SELECT max(v.k) FROM lvls v
-                   WHERE v.lvl >= l.l AND v.k < p.q), -1) AS pred,
-         coalesce((SELECT max(v.k) FROM lvls v
-                   WHERE v.lvl >= l.l + 1 AND v.k < p.q), -1)
-           AS pred_above
-  FROM probes p
-  CROSS JOIN (SELECT unnest(range(1, (SELECT lm FROM lmax) + 1))
-              AS l) l
-), steps AS (
-  SELECT w.*,
-         (SELECT count(*) FROM lvls v
-          WHERE v.lvl >= w.level AND v.k > w.pred_above
-            AND v.k < w.q) AS h_steps,
-         (SELECT count(*) FROM lvls v
-          WHERE v.lvl >= w.level + 1 AND v.k > w.pred_above
-            AND v.k < w.q) = 0 AS no_higher_in_range
-  FROM walk w
-), per_probe AS (
-  SELECT pid, sum(h_steps) AS walk_steps,
-         max(CASE WHEN level = 1 THEN pred END) AS level1_pred,
-         bool_and(no_higher_in_range) AS invariant_ok
-  FROM steps GROUP BY pid
-), direct AS (
-  SELECT p.pid,
-         coalesce((SELECT max(k) FROM lvls WHERE k < p.q), -1)
-           AS direct_pred
-  FROM probes p
-)
-SELECT s.pid, CAST(s.q AS BIGINT) AS q, s.level,
-       CAST(s.pred AS BIGINT) AS pred_at_level,
-       CAST(s.h_steps AS BIGINT) AS h_steps,
-       s.no_higher_in_range,
-       CAST(pp.walk_steps + (SELECT lm FROM lmax) AS BIGINT)
-         AS total_steps,
-       CAST(d.direct_pred AS BIGINT) AS direct_pred,
-       pp.level1_pred = d.direct_pred AS search_ok,
-       pp.invariant_ok,
-       CAST((SELECT lm FROM lmax) AS INTEGER) AS lmax,
-       CAST((SELECT count(*) FROM lvls) AS INTEGER) AS n_keys
-FROM steps s JOIN per_probe pp USING (pid) JOIN direct d USING (pid)
-"""
-
-
-@register("q_docs_skiplist_search", _SKIPLIST_SQL)
-def q_docs_skiplist_search(spark, sf_dir):
-    """Skip list (Pugh 1990) with ZERO pointer chasing: because the
-    level-l list is by definition {keys with level ≥ l} in sorted
-    order, the entire search path of any probe falls out of closed-
-    form windowed aggregates — per level, the predecessor is max(key
-    < q at level ≥ l) and the horizontal step count is the number of
-    level-l keys strictly between the level-above predecessor and the
-    probe. Heights are md5-geometric (1 + trailing zeros, capped),
-    probes are md5-derived, everything distributed joins — the same
-    no-insertion discipline as the treap and B+-tree rows. The
-    invariant that makes skip-list search CORRECT is pinned per
-    (probe, level): no key of any higher level lies in the window the
-    level-l walk traverses (no_higher_in_range — why descending never
-    overshoots), and the final level-1 predecessor is pinned equal to
-    the directly computed global predecessor (search_ok). Total path
-    length (horizontal steps + one vertical per level) is emitted —
-    the O(log n) behavior measured, not assumed."""
-    keys = (_t(spark, sf_dir, "documents").select("doc_id")
-            .orderBy("doc_id").limit(64)
-            .select(F.conv(F.substring(F.md5(F.concat(
-                F.lit("sk:"), F.col("doc_id").cast("string"))), 1, 12),
-                16, 10).cast("long").alias("k")))
-    lvls = keys.select(
-        "k", (1 + F.least(F.lit(4), F.length(F.bin(
-            F.col("k").bitwiseAND(-F.col("k")))) - 1)).alias("lvl"))
-    lvls = lvls.persist()
-    lm = int(lvls.agg(F.max("lvl")).collect()[0][0])
-    nk = lvls.count()
-    probes = spark.range(1, 9).select(
-        F.col("id").cast("int").alias("pid"),
-        F.conv(F.substring(F.md5(F.concat(
-            F.lit("skq:"), F.col("id").cast("string"))), 1, 12),
-            16, 10).cast("long").alias("q"))
-    levels = spark.range(1, lm + 1).select(
-        F.col("id").cast("int").alias("level"))
-    grid = probes.crossJoin(levels)
-    lv = lvls.select(F.col("k").alias("vk"), F.col("lvl").alias("vl"))
-    pred = (grid.join(lv, (F.col("vl") >= F.col("level"))
-                     & (F.col("vk") < F.col("q")), "left")
-            .groupBy("pid", "q", "level")
-            .agg(F.coalesce(F.max("vk"), F.lit(-1)).alias("pred")))
-    pred_above = (grid.join(lv, (F.col("vl") >= F.col("level") + 1)
-                            & (F.col("vk") < F.col("q")), "left")
-                  .groupBy("pid", "level")
-                  .agg(F.coalesce(F.max("vk"), F.lit(-1))
-                       .alias("pred_above")))
-    walk = pred.join(pred_above, ["pid", "level"])
-    hs = (walk.join(lv, (F.col("vl") >= F.col("level"))
-                    & (F.col("vk") > F.col("pred_above"))
-                    & (F.col("vk") < F.col("q")), "left")
-          .groupBy("pid", "q", "level", "pred", "pred_above")
-          .agg(F.count("vk").alias("h_steps"),
-               (F.sum(F.when(F.col("vl") >= F.col("level") + 1, 1)
-                      .otherwise(0)) == 0).alias("no_higher_in_range")))
-    per_probe = hs.groupBy("pid").agg(
-        F.sum("h_steps").alias("walk_steps"),
-        F.max(F.when(F.col("level") == 1, F.col("pred")))
-        .alias("level1_pred"),
-        F.min("no_higher_in_range").alias("invariant_ok"))
-    direct = (probes.join(lv, F.col("vk") < F.col("q"), "left")
-              .groupBy("pid")
-              .agg(F.coalesce(F.max("vk"), F.lit(-1))
-                   .alias("direct_pred")))
-    return (hs.join(per_probe, "pid").join(direct, "pid")
-            .select("pid", F.col("q").cast("long"),
-                    "level",
-                    F.col("pred").cast("long").alias("pred_at_level"),
-                    F.col("h_steps").cast("long"),
-                    "no_higher_in_range",
-                    (F.col("walk_steps") + lm).cast("long")
-                    .alias("total_steps"),
-                    F.col("direct_pred").cast("long"),
-                    (F.col("level1_pred") == F.col("direct_pred"))
-                    .alias("search_ok"),
-                    "invariant_ok",
-                    F.lit(lm).cast("int").alias("lmax"),
-                    F.lit(nk).cast("int").alias("n_keys")))
-
-
-_BUDDY_SQL = """
-WITH RECURSIVE ops AS (
-  SELECT row_number() OVER (ORDER BY event_id) AS opi,
-         CASE WHEN event_type IN ('click', 'view', 'error')
-              THEN 'A' ELSE 'F' END AS kind,
-         CASE WHEN event_type IN ('click', 'view', 'error')
-              THEN 1 + CAST(round(value) AS BIGINT) % 3
-              ELSE CAST(-1 AS BIGINT) END AS o
-  FROM (SELECT * FROM events ORDER BY event_id LIMIT 20)
-), st AS (
-  SELECT 0 AS step, 1 AS opi, 'idle' AS mode,
-         CAST(-1 AS BIGINT) AS pend_o, CAST(-1 AS BIGINT) AS pend_addr,
-         [CAST(600 AS BIGINT)] AS fl,
-         CAST([] AS BIGINT[]) AS live,
-         '' AS action, CAST(-1 AS BIGINT) AS a_o,
-         CAST(-1 AS BIGINT) AS a_addr, 0 AS act_opi
-  UNION ALL
-  SELECT s.step + 1,
-    -- opi
-    CASE WHEN s.mode = 'idle' AND q.kind = 'A' THEN s.opi
-         WHEN s.mode = 'idle' THEN s.opi + 1
-         WHEN s.mode = 'alloc' AND q.exact IS NOT NULL THEN s.opi + 1
-         WHEN s.mode = 'alloc' AND q.bigger IS NULL THEN s.opi + 1
-         WHEN s.mode = 'alloc' THEN s.opi
-         ELSE s.opi END,
-    -- mode
-    CASE WHEN s.mode = 'idle' AND q.kind = 'A' THEN 'alloc'
-         WHEN s.mode = 'idle' AND len(s.live) = 0 THEN 'idle'
-         WHEN s.mode = 'idle' THEN 'coalesce'
-         WHEN s.mode = 'alloc' AND q.exact IS NOT NULL THEN 'idle'
-         WHEN s.mode = 'alloc' AND q.bigger IS NULL THEN 'idle'
-         WHEN s.mode = 'alloc' THEN 'alloc'
-         WHEN s.mode = 'coalesce' AND q.can_merge THEN 'coalesce'
-         ELSE 'idle' END,
-    -- pend_o
-    CASE WHEN s.mode = 'idle' AND q.kind = 'A' THEN q.o
-         WHEN s.mode = 'idle' AND len(s.live) > 0 AND q.kind = 'F'
-           THEN (q.victim % 10000) // 100
-         WHEN s.mode = 'coalesce' AND q.can_merge THEN s.pend_o + 1
-         ELSE s.pend_o END,
-    -- pend_addr
-    CASE WHEN s.mode = 'idle' AND len(s.live) > 0 AND q.kind = 'F'
-           THEN q.victim % 100
-         WHEN s.mode = 'coalesce' AND q.can_merge
-           THEN least(s.pend_addr, q.buddy)
-         ELSE s.pend_addr END,
-    -- fl
-    CASE WHEN s.mode = 'alloc' AND q.exact IS NOT NULL
-           THEN list_filter(s.fl, x -> x <> q.exact)
-         WHEN s.mode = 'alloc' AND q.bigger IS NOT NULL
-           THEN list_sort(list_concat(
-                  list_filter(s.fl, x -> x <> q.bigger),
-                  [(q.bigger // 100 - 1) * 100 + q.bigger % 100,
-                   (q.bigger // 100 - 1) * 100 + q.bigger % 100
-                     + (CAST(1 AS BIGINT) << CAST(q.bigger // 100 - 1
-                                                  AS INTEGER))]))
-         WHEN s.mode = 'coalesce' AND q.can_merge
-           THEN list_filter(s.fl, x -> x <> s.pend_o * 100 + q.buddy)
-         WHEN s.mode = 'coalesce'
-           THEN list_sort(list_append(s.fl,
-                  s.pend_o * 100 + s.pend_addr))
-         ELSE s.fl END,
-    -- live
-    CASE WHEN s.mode = 'idle' AND len(s.live) > 0 AND q.kind = 'F'
-           THEN list_filter(s.live, x -> x <> q.victim)
-         WHEN s.mode = 'alloc' AND q.exact IS NOT NULL
-           THEN list_sort(list_append(s.live,
-                  s.opi * 10000 + s.pend_o * 100 + q.exact % 100))
-         ELSE s.live END,
-    -- action trace
-    CASE WHEN s.mode = 'idle' AND q.kind = 'A' THEN 'alloc_start'
-         WHEN s.mode = 'idle' AND len(s.live) = 0 THEN 'free_noop'
-         WHEN s.mode = 'idle' THEN 'free_pick'
-         WHEN s.mode = 'alloc' AND q.exact IS NOT NULL
-           THEN 'alloc_done'
-         WHEN s.mode = 'alloc' AND q.bigger IS NOT NULL THEN 'split'
-         WHEN s.mode = 'alloc' THEN 'alloc_fail'
-         WHEN s.mode = 'coalesce' AND q.can_merge THEN 'merge'
-         ELSE 'free_done' END,
-    -- a_o / a_addr (what the trace row reports)
-    CASE WHEN s.mode = 'idle' AND q.kind = 'A' THEN q.o
-         WHEN s.mode = 'idle' AND len(s.live) = 0 THEN -1
-         WHEN s.mode = 'idle' THEN (q.victim % 10000) // 100
-         WHEN s.mode = 'alloc' AND q.exact IS NOT NULL THEN s.pend_o
-         WHEN s.mode = 'alloc' AND q.bigger IS NOT NULL
-           THEN q.bigger // 100
-         WHEN s.mode = 'alloc' THEN s.pend_o
-         WHEN s.mode = 'coalesce' AND q.can_merge THEN s.pend_o
-         ELSE s.pend_o END,
-    CASE WHEN s.mode = 'idle' AND q.kind = 'A' THEN -1
-         WHEN s.mode = 'idle' AND len(s.live) = 0 THEN -1
-         WHEN s.mode = 'idle' THEN q.victim % 100
-         WHEN s.mode = 'alloc' AND q.exact IS NOT NULL
-           THEN q.exact % 100
-         WHEN s.mode = 'alloc' AND q.bigger IS NOT NULL
-           THEN q.bigger % 100
-         WHEN s.mode = 'alloc' THEN -1
-         WHEN s.mode = 'coalesce' AND q.can_merge
-           THEN least(s.pend_addr, q.buddy)
-         ELSE s.pend_addr END,
-    s.opi
-  FROM st s, LATERAL (
-    SELECT o2.kind, o2.o,
-           CASE WHEN len(s.live) > 0 THEN
-             list_sort(s.live)[CAST(CAST(concat('0x', substr(md5('bd:'
-               || CAST(s.opi AS VARCHAR)), 1, 6)) AS BIGINT)
-               % len(s.live) + 1 AS INTEGER)]
-           ELSE NULL END AS victim,
-           list_min(list_filter(s.fl, x -> x // 100 = s.pend_o))
-             AS exact,
-           list_min(list_filter(s.fl, x -> x // 100 > s.pend_o))
-             AS bigger,
-           xor(s.pend_addr, CAST(1 AS BIGINT)
-               << CAST(greatest(s.pend_o, 0) AS INTEGER)) AS buddy,
-           s.pend_o < 6 AND list_contains(s.fl,
-             s.pend_o * 100 + xor(s.pend_addr, CAST(1 AS BIGINT)
-               << CAST(greatest(s.pend_o, 0) AS INTEGER))) AS can_merge
-    FROM ops o2 WHERE o2.opi = s.opi
-  ) q
-  WHERE s.opi <= 20 AND s.step < 200
-)
-, fin AS (
-  SELECT * FROM st ORDER BY step DESC LIMIT 1
-), blocks AS (
-  SELECT x // 100 AS o, x % 100 AS addr, 'free' AS kindb
-  FROM fin, unnest(fin.fl) AS u(x)
-  UNION ALL
-  SELECT (x % 10000) // 100, x % 100, 'live'
-  FROM fin, unnest(fin.live) AS u(x)
-), bchk AS (
-  SELECT coalesce(sum(CASE WHEN kindb = 'free'
-           THEN CAST(1 AS BIGINT) << CAST(o AS INTEGER)
-           ELSE 0 END), 0) AS free_units,
-         coalesce(sum(CASE WHEN kindb = 'live'
-           THEN CAST(1 AS BIGINT) << CAST(o AS INTEGER)
-           ELSE 0 END), 0) AS live_units,
-         bool_and(addr % (CAST(1 AS BIGINT) << CAST(o AS INTEGER))
-                  = 0) AS aligned,
-         sum(CASE WHEN kindb = 'free' THEN 1 ELSE 0 END)
-           AS n_free_blocks,
-         sum(CASE WHEN kindb = 'live' THEN 1 ELSE 0 END) AS n_live
-  FROM blocks
-), disj AS (
-  SELECT coalesce(bool_and(prev_end IS NULL OR addr >= prev_end),
-                  TRUE) AS disjoint
-  FROM (SELECT addr,
-               lag(addr + (CAST(1 AS BIGINT) << CAST(o AS INTEGER)))
-                 OVER (ORDER BY addr) AS prev_end
-        FROM blocks) t
-), coalq AS (
-  SELECT coalesce(bool_and(NOT list_contains(fi.fl,
-           (x // 100) * 100 + xor(x % 100, CAST(1 AS BIGINT)
-             << CAST(x // 100 AS INTEGER)))), TRUE) AS coalesced
-  FROM fin fi, unnest(fi.fl) AS u(x)
-  WHERE x // 100 < 6
-)
-SELECT CAST(s.step AS INTEGER) AS step,
-       CAST(s.act_opi AS INTEGER) AS opi,
-       s.action,
-       CAST(s.a_o AS INTEGER) AS block_order,
-       CAST(s.a_addr AS BIGINT) AS block_addr,
-       CAST(b.free_units AS BIGINT) AS free_units,
-       CAST(b.live_units AS BIGINT) AS live_units,
-       b.free_units + b.live_units = 64 AS conservation_ok,
-       b.aligned AS aligned_ok,
-       d.disjoint AS disjoint_ok,
-       c.coalesced AS fully_coalesced_ok,
-       CAST(b.n_free_blocks AS INTEGER) AS n_free_blocks,
-       CAST(b.n_live AS INTEGER) AS n_live
-FROM st s CROSS JOIN bchk b CROSS JOIN disj d CROSS JOIN coalq c
-WHERE s.step > 0
-"""
-
-
-@register("q_events_buddy_allocator", _BUDDY_SQL)
-def q_events_buddy_allocator(spark, sf_dir):
-    """Buddy memory allocation (Knowlton 1965 — the power-of-two
-    allocator inside the Linux page allocator and jemalloc size
-    classes) replayed over a 64-unit arena with ops derived from the
-    first 20 events (click/view/error allocate a 2/4/8-unit block by
-    value, purchase/signup free an md5-chosen live allocation), one
-    ACTION per step so split cascades (take the smallest larger free
-    block, halve it) and coalesce cascades (while the buddy
-    addr XOR 2^o is free, merge upward) fall out of the same uniform
-    state machine the extendible-hashing row uses. Every defining
-    invariant is pinned from the final state: buddy ALIGNMENT
-    (addr ≡ 0 mod 2^order for every live and free block — the
-    property that makes the XOR buddy computation sound), unit
-    CONSERVATION (free + live = 64), block DISJOINTNESS (one lag
-    window over addresses), and FULL COALESCING (no free block's
-    buddy is also free — the invariant the free path maintains).
-    The emitted trace names every split, merge, allocation, failure
-    and no-op. Engine: driver replay; oracle: a recursive CTE whose
-    state is the encoded free list, the live list, and a pending-op
-    mode — with the DuckDB gotchas applied (vectorized CASE evaluates
-    both branches, so shifts by the idle-state sentinel are clamped
-    via greatest; xor() is a function, '#' is not an operator)."""
-    import hashlib as _hl
-    rows = (_t(spark, sf_dir, "events")
-            .orderBy("event_id").limit(20)
-            .select("event_id", "event_type",
-                    F.round("value").cast("long").alias("v"))
-            .collect())
-    ops = []
-    for i, r in enumerate(rows, 1):
-        if r["event_type"] in ("click", "view", "error"):
-            ops.append((i, "A", 1 + int(r["v"]) % 3))
-        else:
-            ops.append((i, "F", -1))
-    fl = [600]
-    live: list = []
-    trace = []
-    step, opi, mode = 0, 1, "idle"
-    pend_o = pend_addr = -1
-    while opi <= len(ops) and step < 200:
-        step += 1
-        if mode == "idle":
-            _, kind, o = ops[opi - 1]
-            if kind == "A":
-                trace.append((step, opi, "alloc_start", o, -1))
-                mode, pend_o = "alloc", o
-            elif not live:
-                trace.append((step, opi, "free_noop", -1, -1))
-                opi += 1
-            else:
-                k = int(_hl.md5(f"bd:{opi}".encode())
-                        .hexdigest()[:6], 16) % len(live)
-                v = sorted(live)[k]
-                live.remove(v)
-                pend_o, pend_addr = (v % 10000) // 100, v % 100
-                trace.append((step, opi, "free_pick", pend_o,
-                              pend_addr))
-                mode = "coalesce"
-                opi += 1
-        elif mode == "alloc":
-            exact = sorted(e for e in fl if e // 100 == pend_o)
-            if exact:
-                e = exact[0]
-                fl.remove(e)
-                live.append(opi * 10000 + pend_o * 100 + e % 100)
-                trace.append((step, opi, "alloc_done", pend_o,
-                              e % 100))
-                mode = "idle"
-                opi += 1
-            else:
-                bigger = sorted(e for e in fl if e // 100 > pend_o)
-                if bigger:
-                    e = bigger[0]
-                    fl.remove(e)
-                    q, a = e // 100, e % 100
-                    fl += [(q - 1) * 100 + a,
-                           (q - 1) * 100 + a + (1 << (q - 1))]
-                    fl.sort()
-                    trace.append((step, opi, "split", q, a))
-                else:
-                    trace.append((step, opi, "alloc_fail", pend_o,
-                                  -1))
-                    mode = "idle"
-                    opi += 1
-        else:
-            buddy = pend_addr ^ (1 << pend_o)
-            enc = pend_o * 100 + buddy
-            if pend_o < 6 and enc in fl:
-                fl.remove(enc)
-                trace.append((step, opi, "merge", pend_o,
-                              min(pend_addr, buddy)))
-                pend_addr = min(pend_addr, buddy)
-                pend_o += 1
-            else:
-                fl.append(pend_o * 100 + pend_addr)
-                fl.sort()
-                trace.append((step, opi, "free_done", pend_o,
-                              pend_addr))
-                mode = "idle"
-    blocks = [(x // 100, x % 100) for x in fl] +              [((x % 10000) // 100, x % 100) for x in live]
-    free_units = sum(1 << o for o, _ in ((x // 100, 0) for x in fl))
-    live_units = sum(1 << ((x % 10000) // 100) for x in live)
-    aligned = all(a % (1 << o) == 0 for o, a in blocks)
-    sb = sorted(blocks, key=lambda b: b[1])
-    disjoint = all(b1[1] + (1 << b1[0]) <= b2[1]
-                   for b1, b2 in zip(sb, sb[1:]))
-    coalesced = all(not (x // 100 < 6 and
-                         (x // 100) * 100
-                         + ((x % 100) ^ (1 << (x // 100))) in fl)
-                    for x in fl)
-    out = [(st, oi, act, ao, aa, free_units, live_units,
-            free_units + live_units == 64, aligned, disjoint,
-            coalesced, len(fl), len(live))
-           for (st, oi, act, ao, aa) in trace]
-    return spark.createDataFrame(
-        out, "step int, opi int, action string, block_order int,"
-             " block_addr long, free_units long, live_units long,"
-             " conservation_ok boolean, aligned_ok boolean,"
-             " disjoint_ok boolean, fully_coalesced_ok boolean,"
-             " n_free_blocks int, n_live int")
-
-
-
-_SPECDEC_SQL = """
-WITH mid AS (
-  -- integer epoch-microsecond midpoint: identical in both engines
-  SELECT (epoch_us(min(ts)) + epoch_us(max(ts))) // 2 AS m
-  FROM events
-), cnts AS (
-  SELECT event_type,
-         sum(CASE WHEN epoch_us(ts) < (SELECT m FROM mid)
-                  THEN 1 ELSE 0 END) AS b,
-         sum(CASE WHEN epoch_us(ts) >= (SELECT m FROM mid)
-                  THEN 1 ELSE 0 END) AS a
-  FROM events GROUP BY event_type
-), tot AS (
-  SELECT sum(a) AS ta, sum(b) AS tb FROM cnts
-), mm AS (
-  SELECT c.event_type, c.a, c.b, t.ta, t.tb,
-         least(c.a * t.tb, c.b * t.ta) AS m_i,
-         greatest(c.a * t.tb - c.b * t.ta, 0) AS s_i
-  FROM cnts c CROSS JOIN tot t
-), agg AS (
-  SELECT sum(m_i) AS msum, sum(s_i) AS ssum FROM mm
-)
-SELECT m.event_type AS token,
-       CAST(m.a AS BIGINT) AS target_count,
-       CAST(m.b AS BIGINT) AS draft_count,
-       CAST(m.ta AS BIGINT) AS target_total,
-       CAST(m.tb AS BIGINT) AS draft_total,
-       CAST(m.m_i AS BIGINT) AS accept_mass,
-       CAST(m.s_i AS BIGINT) AS residual_mass,
-       m.m_i + m.s_i = m.a * m.tb AS decomposition_ok,
-       CAST(g.msum AS BIGINT) AS alpha_num,
-       CAST(m.ta * m.tb AS BIGINT) AS alpha_den,
-       g.ssum = m.ta * m.tb - g.msum AS residual_total_ok,
-       g.msum <= m.ta * m.tb AS alpha_le_1,
-       (g.msum = m.ta * m.tb)
-         = (m.a * m.tb = m.b * m.ta
-            AND NOT EXISTS (SELECT 1 FROM mm x
-                            WHERE x.a * x.tb <> x.b * x.ta))
-         AS alpha_eq_1_iff_equal
-FROM mm m CROSS JOIN agg g
-"""
-
-
-@register("data_speculative_sampling", _SPECDEC_SQL)
-def data_speculative_sampling(spark, sf_dir):
-    """The speculative-sampling correctness identity (Leviathan/Chen
-    2023 — the acceptance rule that lets a draft model propose tokens
-    for a target model WITHOUT changing the output distribution)
-    verified in EXACT integer arithmetic on two real distributions:
-    draft q = the event-type distribution of the first half of the
-    time range, target p = the second half's. With counts a_i/A
-    (target) and b_i/B (draft), cross-multiplying by AB makes every
-    quantity integral: accept mass m_i = min(a_i·B, b_i·A), residual
-    mass s_i = max(a_i·B − b_i·A, 0), acceptance rate α = Σm/(AB).
-    The theorem — accepted draft tokens plus residual resampling
-    reproduce p EXACTLY — is pinned per token as m_i + s_i = a_i·B
-    (decomposition_ok), the residual normalizer identity
-    Σs = AB − Σm is pinned globally (residual_total_ok), α ≤ 1 is
-    pinned, and α = 1 iff the distributions coincide
-    (alpha_eq_1_iff_equal — honestly data-decided). One conditional
-    count aggregate is the only data-sized stage; this is the
-    arithmetic a serving stack audits when validating a speculative
-    decoder against its target."""
-    ev = (_t(spark, sf_dir, "events")
-          .withColumn("us", F.unix_micros(F.col("ts").cast("timestamp"))))
-    mid = ev.agg(F.expr("(min(us) + max(us)) div 2").alias("m"))
-    cnts = (ev.crossJoin(F.broadcast(mid))
-            .groupBy("event_type")
-            .agg(F.sum(F.when(F.col("us") < F.col("m"), 1)
-                       .otherwise(0)).alias("b"),
-                 F.sum(F.when(F.col("us") >= F.col("m"), 1)
-                       .otherwise(0)).alias("a")))
-    tot = cnts.agg(F.sum("a").alias("ta"), F.sum("b").alias("tb"))
-    mm = (cnts.crossJoin(F.broadcast(tot))
-          .withColumn("m_i", F.least(F.col("a") * F.col("tb"),
-                                     F.col("b") * F.col("ta")))
-          .withColumn("s_i", F.greatest(
-              F.col("a") * F.col("tb") - F.col("b") * F.col("ta"),
-              F.lit(0))))
-    mm = mm.persist()
-    agg = mm.agg(F.sum("m_i").alias("msum"),
-                 F.sum("s_i").alias("ssum"))
-    uneq = mm.filter(F.col("a") * F.col("tb")
-                     != F.col("b") * F.col("ta")).agg(
-        F.count(F.lit(1)).alias("n_uneq"))
-    return (mm.crossJoin(F.broadcast(agg))
-            .crossJoin(F.broadcast(uneq))
-            .select(F.col("event_type").alias("token"),
-                    F.col("a").cast("long").alias("target_count"),
-                    F.col("b").cast("long").alias("draft_count"),
-                    F.col("ta").cast("long").alias("target_total"),
-                    F.col("tb").cast("long").alias("draft_total"),
-                    F.col("m_i").cast("long").alias("accept_mass"),
-                    F.col("s_i").cast("long").alias("residual_mass"),
-                    (F.col("m_i") + F.col("s_i")
-                     == F.col("a") * F.col("tb"))
-                    .alias("decomposition_ok"),
-                    F.col("msum").cast("long").alias("alpha_num"),
-                    (F.col("ta") * F.col("tb")).cast("long")
-                    .alias("alpha_den"),
-                    (F.col("ssum") == F.col("ta") * F.col("tb")
-                     - F.col("msum")).alias("residual_total_ok"),
-                    (F.col("msum") <= F.col("ta") * F.col("tb"))
-                    .alias("alpha_le_1"),
-                    ((F.col("msum") == F.col("ta") * F.col("tb"))
-                     == ((F.col("a") * F.col("tb")
-                          == F.col("b") * F.col("ta"))
-                         & (F.col("n_uneq") == 0)))
-                    .alias("alpha_eq_1_iff_equal")))
-
-
-_CHASE_SQL = """
-WITH r AS (
-  SELECT o_orderkey AS k, o_custkey AS c, o_orderpriority AS p,
-         CAST(o_orderdate AS DATE) AS d,
-         CAST(round(o_totalprice * 100) AS BIGINT) AS t
-  FROM orders
-), keyfd AS (
-  SELECT count(*) = count(DISTINCT k) AS k_is_key FROM r
-), cfd AS (
-  -- does C -> D,T hold in the data? (it decides D2's fate)
-  SELECT count(*) = 0 AS c_determines_dt
-  FROM (SELECT c FROM r GROUP BY c
-        HAVING count(DISTINCT (d, t)) > 1)
-), d1 AS (
-  SELECT (SELECT count(*) FROM r) AS r_rows,
-         (SELECT count(*) FROM
-            (SELECT DISTINCT k, c, p FROM r) a
-            JOIN (SELECT DISTINCT k, d, t FROM r) b USING (k))
-           AS join_rows
-), d2 AS (
-  SELECT (SELECT count(*) FROM r) AS r_rows,
-         (SELECT count(*) FROM
-            (SELECT DISTINCT k, c, p FROM r) a
-            JOIN (SELECT DISTINCT c, d, t FROM r) b USING (c))
-           AS join_rows
-)
-SELECT 'D1: R1(K,C,P) + R2(K,D,T)' AS decomposition,
-       'K' AS intersection,
-       (SELECT k_is_key FROM keyfd) AS int_determines_r1,
-       (SELECT k_is_key FROM keyfd) AS int_determines_r2,
-       (SELECT k_is_key FROM keyfd) AS heath_lossless,
-       CAST(d1.r_rows AS BIGINT) AS r_rows,
-       CAST(d1.join_rows AS BIGINT) AS join_rows,
-       d1.join_rows = d1.r_rows AS data_lossless,
-       (SELECT k_is_key FROM keyfd) = (d1.join_rows = d1.r_rows)
-         AS heath_agrees_with_data,
-       (SELECT k_is_key FROM keyfd) AS key_fd_holds,
-       (SELECT c_determines_dt FROM cfd) AS c_determines_dt
-FROM d1
-UNION ALL
-SELECT 'D2: R1(K,C,P) + R2(C,D,T)',
-       'C',
-       FALSE,                        -- C -> K,P fails (K unique per row)
-       (SELECT c_determines_dt FROM cfd),
-       (SELECT c_determines_dt FROM cfd),
-       CAST(d2.r_rows AS BIGINT),
-       CAST(d2.join_rows AS BIGINT),
-       d2.join_rows = d2.r_rows,
-       (SELECT c_determines_dt FROM cfd) = (d2.join_rows = d2.r_rows),
-       (SELECT k_is_key FROM keyfd),
-       (SELECT c_determines_dt FROM cfd)
-FROM d2
-"""
-
-
-@register("q_orders_chase_lossless", _CHASE_SQL)
-def q_orders_chase_lossless(spark, sf_dir):
-    """Heath's theorem and the chase, machine-checked against REALITY:
-    two binary decompositions of orders(K,C,P,D,T) — D1 splitting on
-    the key K and D2 splitting on the non-key C — are judged three
-    ways that must agree. (1) The CHASE: the engine runs the actual
-    two-row tableau fixpoint (distinguished variables, FD application
-    K→CPDT plus C→DT only if the data exhibits it) and ASSERTS its
-    verdict in-function. (2) HEATH's criterion: lossless iff the
-    intersection attribute functionally determines one side — with
-    both FD premises VERIFIED FROM THE DATA (K unique; C→DT tested by
-    group-having). (3) The DATA itself: R1 ⋈ R2 is materialized as a
-    real distributed join over every order and its cardinality
-    compared to |R| (⊇ always holds for projections, so count
-    equality IS losslessness). heath_agrees_with_data pins (2)=(3) on
-    both decompositions — the textbook theorem holding against a real
-    join — and D2's verdict is honestly data-decided (customers with
-    several orders make the C-join explode). The join test is the
-    data-sized stage; the chase is a 2-row symbolic audit."""
-    r = (_t(spark, sf_dir, "orders")
-         .select(F.col("o_orderkey").alias("k"),
-                 F.col("o_custkey").alias("c"),
-                 F.col("o_orderpriority").alias("p"),
-                 F.col("o_orderdate").cast("date").alias("d"),
-                 F.round(F.col("o_totalprice") * 100).cast("long")
-                 .alias("t")))
-    r = r.persist()
-    r_rows = r.count()
-    k_is_key = r.select("k").distinct().count() == r_rows
-    c_bad = (r.groupBy("c")
-             .agg(F.countDistinct(F.struct("d", "t")).alias("n"))
-             .filter(F.col("n") > 1).count())
-    c_determines_dt = c_bad == 0
-    j1 = (r.select("k", "c", "p").distinct()
-          .join(r.select("k", "d", "t").distinct(), "k").count())
-    j2 = (r.select("k", "c", "p").distinct()
-          .join(r.select("c", "d", "t").distinct(), "c").count())
-
-    # the actual chase on the two-row tableau, per decomposition:
-    # cells are True (distinguished) / False; FDs applied to fixpoint
-    def chase(attrs1, attrs2, fds):
-        rows = [{a: a in attrs1 for a in "KCPDT"},
-                {a: a in attrs2 for a in "KCPDT"}]
-        # two rows agree on X iff both have X distinguished (fresh
-        # variables are unique per row by construction)
-        changed = True
-        while changed:
-            changed = False
-            for lhs, rhs in fds:
-                if all(rows[0][a] and rows[1][a] for a in lhs):
-                    for a in rhs:
-                        for i in (0, 1):
-                            if not rows[i][a]:
-                                rows[i][a] = True
-                                changed = True
-        return any(all(row[a] for a in "KCPDT") for row in rows)
-
-    fds = [("K", "CPDT")] if k_is_key else []
-    if c_determines_dt:
-        fds.append(("C", "DT"))
-    chase1 = chase("KCP", "KDT", fds)
-    chase2 = chase("KCP", "CDT", fds)
-    heath1 = k_is_key
-    heath2 = c_determines_dt  # C -> K,P cannot hold (K unique)
-    assert chase1 == heath1 and chase2 == heath2, \
-        "chase disagrees with Heath's criterion"
-    out = [("D1: R1(K,C,P) + R2(K,D,T)", "K", k_is_key, k_is_key,
-            heath1, r_rows, j1, j1 == r_rows,
-            heath1 == (j1 == r_rows), k_is_key, c_determines_dt),
-           ("D2: R1(K,C,P) + R2(C,D,T)", "C", False,
-            c_determines_dt, heath2, r_rows, j2, j2 == r_rows,
-            heath2 == (j2 == r_rows), k_is_key, c_determines_dt)]
-    return spark.createDataFrame(
-        out, "decomposition string, intersection string,"
-             " int_determines_r1 boolean, int_determines_r2 boolean,"
-             " heath_lossless boolean, r_rows long, join_rows long,"
-             " data_lossless boolean,"
-             " heath_agrees_with_data boolean, key_fd_holds boolean,"
-             " c_determines_dt boolean")
-
-
-# as one contiguous block so the build is paid once, and the block sits
-# between the fast uncovered queries and the already-evidenced 50: the
-# reference-parity gates (kg_pipeline_*_exact) still land inside any
-# realistic snapshot prefix, without their build cost starving ~50 cheap
-# queries of official evidence.
-_PIPELINE_BLOCK = [
-    "kg_pipeline_nodes", "kg_pipeline_edges", "q_events_cohort_retention",
-    "kg_pipeline_nodes_exact", "kg_pipeline_edges_exact",
-]
-
-
-def _reorder_registry():
-    """Order the registry for a time-boxed official gate.
-
-    The driver snapshots queries() in registration order and its round-4
-    artifact truncated at 50 entries, so order IS evidence coverage:
-      1. queries with no official snapshot yet, fastest first (measured at
-         the gate scale, _GATE_WALL_S) — a truncated pass covers the
-         maximum number of not-yet-evidenced queries;
-      2. the pipeline-memo block (payers first within the block);
-      3. the 50 already green 3/3 in CORRECTNESS_r04.json, original order.
-    Pure permutation — the query set, each query's semantics, and every
-    oracle pairing are unchanged (asserted).
-    """
-    covered = set(_OFFICIALLY_COVERED_R4)
-    pipeline = set(_PIPELINE_BLOCK)
-    fast_first = sorted(
-        (n for n in QUERIES if n not in covered and n not in pipeline),
-        key=lambda n: (_GATE_WALL_S.get(n, 3.0), n))
-    order = (fast_first
-             + [n for n in _PIPELINE_BLOCK if n in QUERIES]
-             + [n for n in QUERIES if n in covered])
-    assert sorted(order) == sorted(QUERIES), "reorder must be a permutation"
-    for d in (QUERIES, ORACLE):
-        snap = {n: d[n] for n in order if n in d}
-        d.clear()
-        d.update(snap)
-
-
-# session-15 additions: one warm sweep at the gate scale (sf0.01)
-_GATE_WALL_S.update({
-    "q_orders_crt_checksum": 2.8, "q_yannakakis_reduction": 7.0,
-    "q_events_ntt_convolution": 8.0, "text_sha256_scratch": 2.0,
-    "q_txn_conflict_serializability": 0.6,
-    "q_events_mvcc_snapshot": 1.3, "ann_closest_pair_grid": 1.7,
-    "q_events_dfa_minimization": 1.0, "q_orders_aries_recovery": 1.9,
-    "text_canonical_huffman": 1.7, "q_events_vector_clocks": 0.5,
-    "q_orders_stern_brocot": 0.5,
-    # second wave (same protocol)
-    "q_events_alias_table": 2.1, "text_kmp_prefix_function": 0.8,
-    "q_events_cyk_parse": 8.4, "text_manacher_palindromes": 0.5,
-    "q_events_hall_konig": 3.3, "text_tans_coding": 0.5,
-    "q_docs_rsa_roundtrip": 1.1, "q_docs_extendible_hashing": 0.6,
-    "q_events_josephus": 0.6, "q_docs_rho_cycle": 0.5,
-    "q_events_nash_hawk_dove": 0.7, "q_orders_zeckendorf": 0.5,
-    "q_docs_skiplist_search": 4.0, "q_events_buddy_allocator": 0.6,
-    "data_speculative_sampling": 3.0, "q_orders_chase_lossless": 3.3,
-})
-
-_reorder_registry()

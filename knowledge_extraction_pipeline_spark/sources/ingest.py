@@ -23,12 +23,10 @@ from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .multimodal import MEDIA_SCHEMA
-from .pdf import PAGE_SIZES, corrupt_pdf, encode_pdf, pdf_text_chain, \
-    rich_page_content
+from .pdf import (MEDIA_SCHEMA, PAGE_SIZES, corrupt_pdf, encode_pdf,
+                  pdf_text_chain, rich_page_content)
 
 _TAG_RE = re.compile(r"<[^>]+>")
 _WS_RE = re.compile(r"\s+")

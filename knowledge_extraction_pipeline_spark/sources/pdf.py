@@ -2,8 +2,7 @@
 
 The reference pipeline is PDF-first (its core/document_processor.py reads
 PDFs through three extractor fallbacks before chunking); this module gives
-the Spark rebuild the same *container* awareness as the other media
-formats (BMP/PNG/GIF/JPEG/MP4/WEBP): a deterministic writer that emits a
+the Spark rebuild that document scan: a deterministic writer that emits a
 genuine cross-reference-table PDF, and a parser that reads metadata the
 way a conformant reader does — tail `startxref` → xref table → trailer
 `/Root` → page tree — never by grepping the byte stream for keywords.
@@ -11,9 +10,8 @@ way a conformant reader does — tail `startxref` → xref table → trailer
 Scope is the classic xref-table subset of PDF 1.4: uncompressed content
 streams, a flat page tree, literal-string Info values. Cross-reference
 STREAMS (PDF 1.5+ compressed xref) and content-stream filters are
-honestly refused with ValueError, exactly like progressive JPEG and MP4
-frame decode elsewhere in this package — wrong metadata is worse than a
-clean refusal.
+honestly refused with ValueError — wrong metadata is worse than a clean
+refusal.
 """
 from __future__ import annotations
 
@@ -25,7 +23,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .multimodal import MEDIA_SCHEMA
+# One row per binary document: the input schema of every document scan.
+MEDIA_SCHEMA = T.StructType([
+    T.StructField("media_id", T.LongType()),
+    T.StructField("kind", T.StringType()),
+    T.StructField("mime", T.StringType()),
+    T.StructField("payload", T.BinaryType()),     # opaque bytes
+    T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
+])
 
 PDF_META_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),

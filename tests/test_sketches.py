@@ -49,20 +49,6 @@ def test_hll_sketch_is_union_mergeable(spark, ids5000):
     assert whole["max_rank"] == max(r["max_rank"] for r in halves)
 
 
-def test_hll_small_range_correction(spark):
-    """n=100 « 2.5·m ⇒ the raw estimator biases low; linear counting on the
-    zero-register count recovers the cardinality within a few %."""
-    from knowledge_extraction_pipeline_spark.operators.sketches import (
-        hll_estimate_corrected,
-        hll_kmv_distinct,
-    )
-    df = spark.range(100).select(F.col("id").alias("k"))
-    row = hll_kmv_distinct(df, "k").collect()[0]
-    corrected = hll_estimate_corrected(row["hll_est"],
-                                       row["nonzero_registers"])
-    assert abs(corrected - 100) / 100 < 0.15
-
-
 def test_kmv_null_when_fewer_than_k(spark):
     """Groups with < kmv_k distinct keys have no k-th order statistic —
     kmv_est must be NULL, not a garbage extrapolation."""
@@ -183,216 +169,3 @@ def test_kmv_jaccard_disjoint_groups_zero(spark):
     r = kmv_jaccard(df, "uid", "grp", k=32).collect()[0]
     assert r["n_inter"] == 0
     assert r["jacc_exact_e6"] == 0 and r["jacc_kmv_e6"] == 0
-
-
-def test_gk_quantiles_invariant_and_probe_guarantee(spark):
-    """GK summary: invariant max(g+d) <= 2*eps*N holds on every final
-    tuple, probes sit within eps*N of the requested rank (audited
-    against exact ranks recomputed here), and the summary is an order
-    of magnitude smaller than the stream."""
-    from knowledge_extraction_pipeline_spark.queries import QUERIES, _t
-    import pyspark.sql.functions as F
-
-    sf = "/root/testdata/sf0.001"
-    rows = QUERIES["sketch_gk_quantiles"](spark, sf).collect()
-    assert all(r["invariant_ok"] for r in rows)
-    assert all(r["q50_ok"] and r["q90_ok"] and r["q99_ok"] for r in rows)
-    assert rows[0]["summary_size"] == len(rows) <= 80  # ~O(1/eps) vs 400
-    # rmin/rmax are consistent rank bounds ending at N
-    rs = sorted(rows, key=lambda r: r["i"])
-    assert rs[-1]["rmin"] == 400
-    assert all(a["rmin"] < b["rmin"] for a, b in zip(rs, rs[1:]))
-    # independent exact-rank audit of the p50 answer
-    xs = sorted(
-        r["v"] for r in _t(spark, sf, "events").orderBy("event_id")
-        .limit(400)
-        .select(F.floor(F.col("value") * 100 + 0.5).cast("long")
-                .alias("v")).collect())
-    v = rs[0]["q50_v"]
-    lt = sum(1 for y in xs if y < v)
-    le = sum(1 for y in xs if y <= v)
-    assert lt + 1 <= 200 + 20 and le >= 200 - 20
-
-
-def test_misra_gries_merge_bounds(spark):
-    """Mergeable MG summary: <= k counters, every counter an
-    underestimate within n/(k+1) of the exact count (recomputed here
-    independently), and no word above the n/(k+1) frequency bar missing."""
-    from collections import Counter
-
-    from knowledge_extraction_pipeline_spark.queries import QUERIES, _t
-
-    sf = "/root/testdata/sf0.001"
-    rows = QUERIES["sketch_misra_gries_merge"](spark, sf).collect()
-    assert 1 <= len(rows) <= 8
-    assert all(r["underestimate_ok"] and r["error_ok"]
-               and r["no_missed_heavy"] for r in rows)
-    # independent exact recount
-    texts = [r["text"] for r in
-             _t(spark, sf, "documents").select("text").collect()]
-    cnt = Counter(w for t in texts for w in t.split(" ") if w)
-    n = sum(cnt.values())
-    assert rows[0]["n"] == n
-    for r in rows:
-        assert r["true_cnt"] == cnt[r["word"]]
-        assert r["est"] <= r["true_cnt"]
-        assert r["true_cnt"] - r["est"] <= n // 9
-    # completeness, re-derived: every word with cnt*9 > n is present
-    heavy = {w for w, c in cnt.items() if c * 9 > n}
-    assert heavy <= {r["word"] for r in rows}
-
-
-def test_delta_binpacked_widths_and_sizes(spark):
-    """DELTA_BINARY_PACKED layout: miniblock widths minimal+sufficient,
-    miniblock/block framing matches the 128/32 spec, encoded size beats
-    plain 8-byte encoding on near-sorted timestamps, decode audit green."""
-    from knowledge_extraction_pipeline_spark.queries import QUERIES
-
-    rows = QUERIES["q_events_delta_binpacked"](spark,
-                                               "/root/testdata/sf0.001")
-    rs = sorted(rows.collect(), key=lambda r: r["mb_idx"])
-    assert all(r["width_ok"] and r["decode_ok"] for r in rs)
-    # 999 deltas -> 7 full blocks of 128 + 103 remainder; 32 miniblocks
-    assert len(rs) == 32
-    assert sum(r["n_deltas"] for r in rs) == 999
-    assert all(r["n_deltas"] == 32 for r in rs[:-1])
-    # min_delta constant within each block
-    by_block = {}
-    for r in rs:
-        by_block.setdefault(r["block_idx"], set()).add(r["min_delta"])
-    assert all(len(s) == 1 for s in by_block.values())
-    # timestamps are near-sorted in write order: delta encoding must win
-    assert rs[0]["encoded_bytes"] < rs[0]["plain_bytes"]
-
-
-def test_dgim_closed_form_equals_literal_cascade(spark):
-    """The canonical lazy-counter decomposition the query computes must
-    equal a LITERAL DGIM simulation (prepend bucket of size 1, merge the
-    two oldest whenever a size has three buckets), timestamp for
-    timestamp."""
-    from knowledge_extraction_pipeline_spark.queries import QUERIES, _t
-    import pyspark.sql.functions as F
-
-    sf = "/root/testdata/sf0.001"
-    rows = QUERIES["sketch_dgim_window"](spark, sf).collect()
-    assert all(r["span_ok"] for r in rows)
-    for tag in ("w10", "w4", "w2", "w1"):
-        assert all(r[f"{tag}_ok"] for r in rows)
-    # literal cascade simulation over the same bit stream
-    ev = (_t(spark, sf, "events").orderBy("event_id")
-          .select((F.col("value") >= 50).alias("b")).collect())
-    buckets = []  # newest first: (ts, size)
-    for p, r in enumerate(ev, start=1):
-        if not r["b"]:
-            continue
-        buckets.insert(0, (p, 1))
-        s = 1
-        while sum(1 for _, sz in buckets if sz == s) > 2:
-            olds = [i for i, (_, sz) in enumerate(buckets) if sz == s]
-            i2, i1 = olds[-1], olds[-2]  # two oldest of this size
-            merged = (buckets[i1][0], 2 * s)  # keep newer timestamp
-            buckets = [b for i, b in enumerate(buckets)
-                       if i not in (i1, i2)]
-            # reinsert keeping newest-first (ts descending) order
-            buckets.append(merged)
-            buckets.sort(key=lambda b: -b[0])
-            s *= 2
-    sim = sorted((sz, ts) for ts, sz in buckets)
-    got = sorted((r["size"], r["ts"]) for r in rows)
-    assert sim == got
-    # exactly 1 or 2 buckets of each present size (the DGIM invariant)
-    from collections import Counter
-    per_size = Counter(sz for sz, _ in sim)
-    assert all(1 <= c <= 2 for c in per_size.values())
-
-
-def test_rle_hybrid_regimes_and_formulas(spark):
-    from knowledge_extraction_pipeline_spark.queries import QUERIES
-
-    rows = QUERIES["q_events_rle_hybrid"](spark,
-                                          "/root/testdata/sf0.001")
-    rs = rows.collect()
-    assert all(r["rle_uniform_ok"] and r["rle_minlen_ok"] for r in rs)
-    assert all(r["beats_plain"] for r in rs)
-    day = [r for r in rs if r["stream"] == "day"]
-    typ = [r for r in rs if r["stream"] == "type"]
-    # near-sorted day codes -> RLE runs; interleaved types -> packed
-    assert {r["kind"] for r in day} == {"rle"}
-    assert len(day) == 30
-    assert all(r["kind"] == "packed" for r in typ)
-    # byte formulas re-derived
-    def varint(u):
-        u = max(u, 1)
-        n = 0
-        while u:
-            n += 1
-            u >>= 7
-        return n
-    for r in rs:
-        if r["kind"] == "rle":
-            assert r["seg_bytes"] == varint(2 * r["n_values"]) + \
-                (5 + 7) // 8
-        else:
-            g = (r["n_values"] + 7) // 8
-            assert r["seg_bytes"] == varint(2 * g + 1) + g * (
-                3 if r["stream"] == "type" else 5)
-    # stream totals equal the sum of their segments
-    for grp, rows_ in (("day", day), ("type", typ)):
-        assert rows_[0]["total_bytes"] == sum(x["seg_bytes"]
-                                              for x in rows_)
-
-
-def test_cuckoo_filter_no_false_negatives_and_involution(spark):
-    from knowledge_extraction_pipeline_spark.queries import QUERIES
-
-    rows = QUERIES["sketch_cuckoo_filter"](spark,
-                                           "/root/testdata/sf0.001")
-    rs = rows.collect()
-    assert len(rs) == 200
-    # THE filter guarantee: zero false negatives
-    assert all(r["found"] for r in rs)
-    # partial-key trick: either bucket recovers the other
-    assert all(r["involution_ok"] for r in rs)
-    # every item landed somewhere: slots_used + kicked-out... the table
-    # holds exactly the 200 inserted fingerprints (no loss at 78% load)
-    assert rs[0]["slots_used"] == 200
-    assert rs[0]["slots_used"] <= 256
-    # fp rate over 200 disjoint probes stays near the 2s/2^b theory
-    assert rs[0]["neg_tested"] == 200
-    assert rs[0]["neg_false_pos"] <= 20
-    # fingerprints are 8-bit nonzero; buckets in range
-    assert all(1 <= r["fp"] <= 255 for r in rs)
-    assert all(0 <= r["i1"] < 64 and 0 <= r["i2"] < 64 for r in rs)
-
-
-def test_kway_merge_huffman_optimality_audit(spark):
-    import heapq
-
-    from knowledge_extraction_pipeline_spark.queries import QUERIES
-
-    rows = sorted(QUERIES["q_events_kway_merge_plan"](
-        spark, "/root/testdata/sf0.001").collect(),
-        key=lambda r: r["step"])
-    assert all(r["huffman_le_naive"] and r["root_ok"] and r["pad_ok"]
-               for r in rows)
-    assert rows[0]["n_runs"] == 30 and rows[0]["dummies"] == 1
-    assert len(rows) == 15  # (31 - 1) / (3 - 1)
-    # cumulative cost is consistent and each merge takes the 3 smallest
-    assert rows[-1]["cum_cost"] == rows[-1]["total_cost"]
-    # independent optimal cost via a real heap over the raw day counts
-    # (ties may reorder equal sizes but the k-ary Huffman COST is unique)
-    h = []
-    from knowledge_extraction_pipeline_spark.queries import _t
-    import pyspark.sql.functions as F
-    days = (_t(spark, "/root/testdata/sf0.001", "events")
-            .groupBy(F.col("ts").cast("date").alias("d"))
-            .agg(F.count(F.lit(1)).alias("c")).collect())
-    sizes = [int(r["c"]) for r in days] + [0]  # one dummy
-    for s in sizes:
-        heapq.heappush(h, s)
-    cost = 0
-    while len(h) > 1:
-        m = heapq.heappop(h) + heapq.heappop(h) + heapq.heappop(h)
-        cost += m
-        heapq.heappush(h, m)
-    assert rows[-1]["total_cost"] == cost

@@ -5,7 +5,6 @@ reference never hits — SURVEY §4 'the hard 20%')."""
 from pyspark.sql import functions as F
 
 from knowledge_extraction_pipeline_spark.operators.materialize import (
-    alias_assignments,
     build_edges,
     build_nodes,
     canonical_mentions,
@@ -38,9 +37,15 @@ def _hot_world(spark, n_chunks=3000):
     return m, tr
 
 
+def _identity_assignments(m):
+    """No term in the hot world has an alias: every norm_term is its own
+    canonical id."""
+    return m.select("norm_term").distinct().withColumn("canon", F.col("norm_term"))
+
+
 def test_salted_pair_counts_exact_under_skew(spark):
     m, tr = _hot_world(spark)
-    asn = alias_assignments(m)
+    asn = _identity_assignments(m)
     mc = canonical_mentions(m, asn)
     edges = {(r["subj"], r["obj"]): r for r in
              build_edges(tr, asn, mc).collect()}
@@ -58,7 +63,7 @@ def test_salted_pair_counts_exact_under_skew(spark):
 
 def test_salted_node_caps_under_skew(spark):
     m, _ = _hot_world(spark)
-    asn = alias_assignments(m)
+    asn = _identity_assignments(m)
     nodes = {r["canon"]: r for r in build_nodes(canonical_mentions(m, asn)).collect()}
     hot = nodes["hot"]
     assert hot["mention_count"] == 3000
