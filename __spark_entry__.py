@@ -2,8 +2,9 @@
 
 entry(spark)  — flagship query at sf0.001 (KG typed co-occurrence edges over
                 the documents corpus, top-20 by evidence count).
-queries()     — the 190 registered queries, one or more per operator the
-                KG system uses (SURVEY.md §2); each callable takes
+queries()     — the registered queries, one or more per operator the KG
+                system uses (SURVEY.md §2), plus the storage/index structures
+                tests/test_distsys_ops.py checks; each callable takes
                 (spark, sf_dir) → DataFrame.
 oracle_sql()  — matching ANSI SQL for DuckDB over the pre-registered views:
                 mirrored MinHash/SimHash/LSH/pagerank, reference-computed

@@ -49,6 +49,17 @@ def pretokenize(c: Column) -> Column:
     return F.regexp_extract_all(c, F.lit(PRETOKEN_PATTERN), F.lit(0))
 
 
+def has_citations(c: Column) -> Column:
+    """Citation detection, the high-signal subset of the reference's 9 regexes
+    (core/semantic_chunker.py:146-171): (Author et al., 2020) / [1] / [1-3] /
+    'see Figure 5'."""
+    return (
+        c.rlike(r"\([A-Z][a-z]+( et al\.)?,? \d{4}\)")
+        | c.rlike(r"\[\d+(-\d+)?(,\s*\d+)*\]")
+        | c.rlike(r"see (Figure|Table|Section) \d+")
+    )
+
+
 def lang_id(c: Column) -> Column:
     """Stopword-hit language heuristic over {en,es,fr,de,zh}: picks the
     language whose marker words hit most; defaults 'en'. Pure expression —

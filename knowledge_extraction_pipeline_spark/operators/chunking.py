@@ -2,15 +2,23 @@
 mapping of the reference's semantic chunker (core/semantic_chunker.py).
 
 In this engine the natural chunk is the TURN (stable conv_id/turn_idx
-ordering); these operators exist for parity with the reference's
-chunk-split and chunk-merge behavior, each implemented per SURVEY §2.5:
+ordering); these operators exist for parity with the reference's sub-turn
+segmentation and chunk-merge behavior, each implemented per SURVEY §2.5:
 
+  sentence segmentation  :196-224  → vectorized regex inside a pandas UDF
+                                     (Java regex lacks some lookbehinds)
+  paragraph segmentation :230-256  → same
+  section extraction     :258-288  → same (header regexes)
   word count             :294-296  → size(split(...)) expression
   topic-boundary detect  :314-351  → deterministic hash embedding + shifted
                                      cosine inside applyInPandas per conv
   semantic splitting     :386-454  → stateful scan in the same grouped pass
   small-chunk merge      :460-510  → same grouped pass
   coherence score        :617-620  → lag window + cosine
+  prev/next linking      :631-632  → lag/lead window (operators/extract.py
+                                     window_turns)
+  context-window expand  (scripts/search.py:113-158) → collect_list over
+                                     rowsBetween(-n, n)
 
 The "embedding" used for topic boundaries is a deterministic hashed
 bag-of-words vector (north rule: no model downloads / per-row Python at
@@ -19,11 +27,23 @@ scale); cosine thresholds keep the reference's semantics shape.
 
 from __future__ import annotations
 
+import re
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# Sentence-boundary regex: split after . ! ? not preceded by common
+# abbreviations (the high-signal subset of the reference's 20-lookbehind
+# battery, semantic_chunker.py:207).
+_SENT_RE = re.compile(
+    r"(?<![A-Z]\.)(?<!\bDr\.)(?<!\bMr\.)(?<!\bMs\.)(?<!\bal\.)"
+    r"(?<!\be\.g\.)(?<!\bi\.e\.)(?<=[.!?])\s+")
+_PARA_RE = re.compile(r"\n\s*\n")
+_HEADER_RE = re.compile(
+    r"^(#{1,6}\s+.+|\d+(\.\d+)*\s+[A-Z].+|[A-Z][A-Z\s]{4,})$", re.MULTILINE)
 
 _EMB_DIM = 32
 
@@ -41,6 +61,21 @@ def _hash_embed(texts: list[str]) -> np.ndarray:
     norms = np.linalg.norm(out, axis=1, keepdims=True)
     norms[norms == 0] = 1.0
     return out / norms
+
+
+@F.pandas_udf(T.ArrayType(T.StringType()))
+def split_sentences_udf(texts: pd.Series) -> pd.Series:
+    return texts.map(lambda t: [s for s in _SENT_RE.split(t or "") if s.strip()])
+
+
+@F.pandas_udf(T.ArrayType(T.StringType()))
+def split_paragraphs_udf(texts: pd.Series) -> pd.Series:
+    return texts.map(lambda t: [p for p in _PARA_RE.split(t or "") if p.strip()])
+
+
+@F.pandas_udf(T.ArrayType(T.StringType()))
+def extract_headers_udf(texts: pd.Series) -> pd.Series:
+    return texts.map(lambda t: [m.group(0) for m in _HEADER_RE.finditer(t or "")])
 
 
 _TOPIC_PLANES = 8
@@ -164,3 +199,11 @@ def merge_small_chunks(chunks: DataFrame, min_words: int = 30,
         return res[[f.name for f in CHUNK_SCHEMA.fields]]
 
     return chunks.groupBy("conv_id").applyInPandas(merge_conv, schema=CHUNK_SCHEMA)
+
+
+def context_window(df: DataFrame, n: int = 1,
+                   text_col: str = "text") -> DataFrame:
+    """Attach ±n neighboring turns' text as context (scripts/search.py:113-158
+    context expansion) — collect_list over rowsBetween(-n, n)."""
+    w = Window.partitionBy("conv_id").orderBy("turn_idx").rowsBetween(-n, n)
+    return df.withColumn("context", F.concat_ws(" ", F.collect_list(text_col).over(w)))

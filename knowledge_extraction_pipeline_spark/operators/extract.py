@@ -216,3 +216,22 @@ def extract_stage(transcripts: DataFrame,
             .persist()
         return mentions_jvm(base, prepared=True), triples_raw_jvm(base, prepared=True)
     return mentions(transcripts), triples_raw(transcripts)
+
+
+def window_turns(transcripts: DataFrame) -> DataFrame:
+    """Per-conversation turn windowing: stable (conv_id, turn_idx) ordering
+    with prev/next linkage — the Spark analog of the reference's chunk
+    prev/next ids (core/semantic_chunker.py:631-632) and the north-rule
+    'per-turn text is windowed by conv_id with stable turn_idx ordering'
+    invariant. One shuffle on conv_id; text is carried through untouched."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("conv_id").orderBy("turn_idx")
+    cid = F.concat_ws("#", "conv_id", "turn_idx")
+    return (
+        transcripts
+        .withColumn("chunk_id", cid)
+        .withColumn("prev_chunk_id", F.lag("chunk_id").over(w))
+        .withColumn("next_chunk_id", F.lead("chunk_id").over(w))
+        .withColumn("chunk_index", F.row_number().over(w) - 1)
+    )

@@ -46,6 +46,50 @@ def graph_stats(nodes: DataFrame, edges: DataFrame) -> dict:
     }
 
 
+def pagerank(edges: DataFrame, damping: float = 0.85, max_iter: int = 10,
+             src: str = "subj", dst: str = "obj") -> DataFrame:
+    """Iterative PageRank on the directed edge table. Contributions flow
+    src→dst; dangling mass redistributed uniformly. One join + one groupBy
+    per iteration; ranks localCheckpointed to bound lineage."""
+    nodes = (
+        edges.select(F.col(src).alias("node"))
+        .unionAll(edges.select(F.col(dst).alias("node")))
+        .distinct()
+    )
+    n = nodes.count()
+    if n == 0:
+        return nodes.withColumn("rank", F.lit(0.0))
+    out_deg = edges.groupBy(src).agg(F.count(F.lit(1)).alias("out_deg")) \
+                   .withColumnRenamed(src, "node").localCheckpoint(eager=True)
+    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=True)
+    e = edges.select(F.col(src).alias("node"), F.col(dst).alias("to")) \
+             .localCheckpoint(eager=True)
+
+    for _ in range(max_iter):
+        contribs = (
+            e.join(ranks, "node").join(out_deg, "node")
+            .select(F.col("to").alias("node"),
+                    (F.col("rank") / F.col("out_deg")).alias("c"))
+            .groupBy("node").agg(F.sum("c").alias("in_sum"))
+        )
+        # dangling mass as a broadcast 1-row aggregate — keeps the whole
+        # iteration inside ONE job instead of a collect per round
+        dang = (
+            ranks.join(out_deg, "node", "left_anti")
+            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("dangling"))
+        )
+        ranks = (
+            nodes.join(contribs, "node", "left")
+            .crossJoin(F.broadcast(dang))
+            .select("node",
+                    (F.lit((1.0 - damping) / n)
+                     + F.lit(damping) * (F.coalesce(F.col("in_sum"), F.lit(0.0))
+                                         + F.col("dangling") / n)).alias("rank"))
+            .localCheckpoint(eager=True)
+        )
+    return ranks.withColumn("rank", F.round("rank", 8))
+
+
 def pagerank_scaled(edges: DataFrame, damping_num: int = 85,
                     damping_den: int = 100, max_iter: int = 15,
                     scale: int = 10**12, src: str = "subj",
@@ -57,7 +101,8 @@ def pagerank_scaled(edges: DataFrame, damping_num: int = 85,
     operation is integer (floor division, exact sums), so the result is
     bit-identical regardless of aggregation order — the determinism float
     PageRank fundamentally lacks at cluster scale (shuffle order changes the
-    float sum). Damping is expressed as the rational damping_num/damping_den.
+    float sum). Same iteration structure as pagerank(); damping expressed as
+    the rational damping_num/damping_den.
 
     personalize: a node id → personalized PageRank (Jeh & Widom, WWW'03
     random-walk-with-restart): ALL teleport mass — the (1−d) restart and the
@@ -396,6 +441,75 @@ def top_k_nodes(nodes: DataFrame, k: int = 20,
     """Top-k concepts (reference: top-N by centrality/evidence,
     graph_builder.py:156-179)."""
     return nodes.orderBy(F.desc(score_col), F.asc("canon")).limit(k)
+
+
+def shortest_path(edges: DataFrame, src_node: str, dst_node: str,
+                  max_hops: int = 6, src: str = "subj",
+                  dst: str = "obj") -> list[str] | None:
+    """Undirected BFS shortest path with predecessor tracking
+    (reference: nx.shortest_path with max_hops cap, graph_builder.py:215-249).
+    Frontier expansion is a distributed join per hop; the backtrack walks the
+    predecessor chain with <= max_hops single-row lookups against the
+    distributed visited table — the driver only ever holds the path itself
+    (<= max_hops + 1 node ids), never the BFS ball."""
+    if src_node == dst_node:
+        return [src_node]
+    spark = edges.sparkSession
+    und = undirected(edges, src, dst).distinct().localCheckpoint(eager=True)
+    visited = spark.createDataFrame([(src_node, None)],
+                                    "node string, pred string")
+    frontier = visited.select("node")
+    for _ in range(max_hops):
+        nxt = (
+            und.join(frontier.withColumnRenamed("node", "src"), "src")
+            .select(F.col("dst").alias("node"), F.col("src").alias("pred"))
+            .join(visited.select("node"), "node", "left_anti")
+            .groupBy("node").agg(F.min("pred").alias("pred"))  # deterministic
+            .localCheckpoint(eager=True)
+        )
+        if nxt.isEmpty():
+            return None
+        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
+        hit = nxt.filter(F.col("node") == dst_node).collect()
+        if hit:
+            # backtrack: <= max_hops point lookups, one node id at a time —
+            # never collects the visited table (the BFS ball can approach the
+            # whole graph; the path cannot exceed max_hops + 1 nodes)
+            path, cur = [dst_node], hit[0]["pred"]
+            while cur is not None:
+                path.append(cur)
+                row = visited.filter(F.col("node") == cur).select("pred").collect()
+                cur = row[0]["pred"] if row else None
+            return list(reversed(path))
+        frontier = nxt.select("node")
+    return None
+
+
+def repair_connectivity(edges: DataFrame, sims: DataFrame,
+                        min_sim: float = 0.15) -> DataFrame:
+    """Give every isolated node its single best-similarity edge if that
+    similarity clears min_sim (reference connectivity repair,
+    infer_relationships_tfidf.py:253-327). `sims` is a scored candidate pair
+    table (id_a, id_b, sim); isolation is judged against `edges`."""
+    from pyspark.sql import Window
+
+    connected = undirected(edges).select("src").distinct() \
+        .withColumnRenamed("src", "id")
+    all_ids = sims.select(F.col("id_a").alias("id")).unionAll(
+        sims.select(F.col("id_b").alias("id"))).distinct()
+    isolated = all_ids.join(connected, "id", "left_anti")
+
+    cands = sims.select(F.col("id_a").alias("id"), F.col("id_b").alias("other"), "sim") \
+        .unionAll(sims.select(F.col("id_b").alias("id"), F.col("id_a").alias("other"), "sim"))
+    return (
+        isolated.join(cands, "id")
+        .filter(F.col("sim") >= min_sim)
+        .withColumn("rn", F.row_number().over(
+            Window.partitionBy("id").orderBy(F.desc("sim"), F.asc("other"))))
+        .filter(F.col("rn") == 1)
+        .select(F.col("id").alias("subj"), F.lit("SIMILAR_TO").alias("pred"),
+                F.col("other").alias("obj"), F.round("sim", 6).alias("sim"))
+    )
 
 
 def triangle_counts(edges: DataFrame, src: str = "subj",
@@ -1450,6 +1564,67 @@ def strongly_connected_components(edges: DataFrame, src: str = "subj",
     raise RuntimeError(
         f"strongly_connected_components did not finish within max_rounds="
         f"{max_rounds}; bound = condensation-DAG depth — raise max_rounds")
+
+
+def dag_longest_path_layers(edges: DataFrame, src: str = "subj",
+                            dst: str = "obj", max_iter: int = 100,
+                            driver_threshold: int = 50_000) -> DataFrame:
+    """Longest-path layer of every vertex in a DAG: layer(v) = the length
+    of the longest path ENDING at v (sources sit at layer 0) — the
+    topological-depth statistic of a dependency/condensation graph, and
+    the scheduling depth bound of any stage DAG built on it. Iterative
+    relaxation layer(v) = max(layer(v), layer(u)+1 over u→v), which
+    converges in exactly longest-path-length rounds on a DAG; a graph with
+    a cycle never converges, so hitting max_iter raises instead of
+    returning wrong layers (run strongly_connected_components first and
+    contract). Integer-only, so cross-engine exact.
+
+    Scale shape: each round is one equi-join + map-side-combinable max on
+    the edge list, localCheckpointed. driver_threshold: small edge lists
+    run the identical relaxation as a driver loop (value-identical: the
+    fixpoint of an integer recurrence does not depend on evaluation
+    order); pass 0 to force the distributed path."""
+    e = edges.select(F.col(src).alias("s"), F.col(dst).alias("d")) \
+        .filter(F.col("s") != F.col("d")).distinct()
+    if driver_threshold > 0:
+        head = e.limit(driver_threshold + 1).collect()
+        if len(head) <= driver_threshold:
+            erows = [(r["s"], r["d"]) for r in head]
+            layer = {v: 0 for sd in erows for v in sd}
+            for _ in range(max_iter):
+                changed = False
+                for s_, d_ in erows:
+                    if layer[s_] + 1 > layer[d_]:
+                        layer[d_] = layer[s_] + 1
+                        changed = True
+                if not changed:
+                    spark = edges.sparkSession
+                    return spark.createDataFrame(
+                        sorted(layer.items()), "node string, layer long")
+            raise RuntimeError(
+                f"dag_longest_path_layers did not converge in max_iter="
+                f"{max_iter} rounds — the graph has a cycle or a longer "
+                "path; contract SCCs first or raise max_iter")
+    e = e.localCheckpoint(eager=True)
+    labels = (e.select(F.col("s").alias("v"))
+              .union(e.select(F.col("d").alias("v")))
+              .distinct().withColumn("layer", F.lit(0).cast("long"))
+              .localCheckpoint(eager=True))
+    for _ in range(max_iter):
+        pred = (e.join(labels.withColumnRenamed("v", "s"), "s")
+                .groupBy(F.col("d").alias("v"))
+                .agg((F.max("layer") + 1).alias("cand")))
+        nxt = (labels.join(pred, "v", "left")
+               .select("v", F.greatest("layer", "cand").alias("layer"))
+               .localCheckpoint(eager=True))
+        if nxt.join(labels.withColumnRenamed("layer", "l0"), "v") \
+              .filter(F.col("layer") > F.col("l0")).isEmpty():
+            return nxt.select(F.col("v").alias("node"), "layer")
+        labels = nxt
+    raise RuntimeError(
+        f"dag_longest_path_layers did not converge in max_iter={max_iter} "
+        "rounds — the graph has a cycle or a longer path; contract SCCs "
+        "first or raise max_iter")
 
 
 def bridges(edges: DataFrame, src: str = "subj", dst: str = "obj",

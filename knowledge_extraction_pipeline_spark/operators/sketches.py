@@ -18,10 +18,14 @@ Cross-engine determinism (the repo-wide recipe):
   double division is IEEE-identical in both engines.
 
 The raw HLL estimator is used as-is (no small-range linear-counting branch
-— ln() last-ulp parity across libm implementations is not guaranteed).
+in the ORACLE path — ln() last-ulp parity across libm implementations is
+not guaranteed); `hll_estimate_corrected` applies the correction for
+engine users and is pytest-verified instead.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -125,6 +129,18 @@ def hll_kmv_distinct(df: DataFrame, key_col: str,
         out = exact.crossJoin(hll).crossJoin(kmv)
     return out.select(*group_cols, "n_exact", "hll_est", "kmv_est",
                       "nonzero_registers", "max_rank")
+
+
+def hll_estimate_corrected(raw_est: float, nonzero_registers: int,
+                           p: int = HLL_P) -> float:
+    """Flajolet small-range correction (linear counting when raw ≤ 2.5·m and
+    empty registers exist). Driver-side float math — engine users get the
+    corrected number; the cross-engine oracle compares the raw components."""
+    m = 1 << p
+    zeros = m - nonzero_registers
+    if raw_est <= 2.5 * m and zeros > 0:
+        return m * math.log(m / zeros)
+    return raw_est
 
 
 def hll_sql(table: str, key_col: str, group_cols: list[str] | None = None,

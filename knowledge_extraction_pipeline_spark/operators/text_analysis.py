@@ -466,3 +466,47 @@ def temperature_weights(docs: DataFrame, budget_docs: int,
                      F.expr(f"((w_e6 * 1000000L) div _tot) * "
                             f"{int(budget_docs)}L div 1000000L")
                      .alias("planned_docs")))
+
+
+def interleave_manifest(docs: DataFrame, shard_size: int = 100,
+                        id_col: str = "doc_id", group_col: str = "source",
+                        seed: int = 42) -> DataFrame:
+    """Epoch-balanced training-order manifest: interleave every source's
+    documents into ONE deterministic global order such that each source is
+    spread uniformly across the epoch (all sources "finish together" —
+    single-epoch proportional mixing without replacement, the order a
+    multi-domain trainer actually reads).
+
+    Weighted-fair-queuing discipline, all integer: within each source,
+    documents are ranked by the portable md5 key (shuffled deterministically,
+    decorrelated from the split/sample keys by the 'mix' tag); document r of
+    a source with n docs gets virtual time vt = (r-1)·10¹² div n ∈ [0, 10¹²)
+    — the (r-1)·10¹² product runs in DECIMAL(38,0)/HUGEINT so ranks beyond
+    9.2M don't overflow a long. The global order is (vt, source, rank);
+    global_ix numbers it and shard assigns fixed-size output shards.
+
+    Scale shape: one window per source partition for the rank, a broadcast
+    of per-source counts, then ONE global sort (Spark range-partitions
+    global sorts, so no single-reducer bottleneck) — the same cost as
+    writing the ordered manifest at all.
+    """
+    if shard_size <= 0:
+        raise ValueError(f"shard_size must be positive, got {shard_size}")
+    rank_w = Window.partitionBy(group_col).orderBy(
+        _rank_hash(F.col(id_col), seed, "mix"), id_col)
+    ranked = docs.select(F.col(id_col).alias("doc_id"),
+                         F.col(group_col).alias("source")) \
+                 .withColumn("src_rank",
+                             F.row_number().over(rank_w).cast("long"))
+    sizes = ranked.groupBy("source").agg(F.count(F.lit(1)).alias("_n"))
+    vt = F.expr("CAST((CAST(src_rank - 1 AS DECIMAL(38,0)) * 1000000000000)"
+                " div _n AS BIGINT)")
+    ordered = (ranked.join(F.broadcast(sizes), "source")
+               .withColumn("vt_scaled", vt).drop("_n"))
+    gix = F.row_number().over(
+        Window.orderBy("vt_scaled", "source", "src_rank")).cast("long")
+    return (ordered.withColumn("global_ix", gix)
+            .withColumn("shard",
+                        F.expr(f"(global_ix - 1) div {int(shard_size)}L"))
+            .select("doc_id", "source", "src_rank", "vt_scaled",
+                    "global_ix", "shard"))

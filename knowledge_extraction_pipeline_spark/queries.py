@@ -8,7 +8,9 @@ then rounded, and every LIMIT has a total order.
 The registry holds the operators the KG system and its data pipeline use
 (SURVEY §2), each with one oracle. Query families, by name prefix:
   q*          — relational scan/filter/agg/join/semi/anti/window/top-k/distinct
-                and the TPC-H shapes (SURVEY §2.2-2.7)
+                and the TPC-H shapes (SURVEY §2.2-2.7), plus storage/index
+                structures (consistent hashing, Merkle diff, LSM, B+-tree,
+                Fenwick, zone maps, join-order DP, Yannakakis)
   kg_*        — the KG-construction semantics on the `documents` corpus
                 (co-occurrence formulas, category-pair typing — SURVEY §2.3-2.4),
                 the graph analytics over it, and the transcripts KG pipeline
@@ -20,7 +22,7 @@ The registry holds the operators the KG system and its data pipeline use
                 retrieval, tokenization
   sketch_*    — HLL/KMV/count-min/count-sketch/theta/bloom sketches
   data_*      — LLM-data-pipeline operators (crawl, packing, sampling,
-                splits, curriculum)
+                splits, curriculum) and error-correcting/erasure codes
   multimodal_pdf_*, multimodal_doc_ingest — the PDF/EPUB document scan
 """
 
@@ -7953,6 +7955,322 @@ def data_crawl_schedule(spark, sf_dir):
          | (F.col("gap") >= F.col("delay_us"))).alias("compliant"))
 
 
+_RING_M = 1 << 60  # 60-bit hash ring: md5-prefix positions stay in BIGINT
+
+_SHARD_RING_SQL = """
+WITH uh AS (
+  SELECT DISTINCT CAST(user_id AS VARCHAR) AS uid,
+         CAST(concat('0x', substr(md5('key:' || CAST(user_id AS VARCHAR)),
+                                  1, 15)) AS BIGINT) AS h
+  FROM events
+), vn AS (
+  SELECT n.node,
+         CAST(concat('0x', substr(md5('vnode:' || n.node || ':'
+                                      || CAST(v.v AS VARCHAR)),
+                                  1, 15)) AS BIGINT) AS p
+  FROM (VALUES ('n0'),('n1'),('n2'),('n3'),('n4')) n(node)
+  CROSS JOIN (SELECT unnest(range(0, 16)) AS v) v
+), ring AS (
+  SELECT uh.uid,
+         min(CASE WHEN vn.node <> 'n4' THEN
+           lpad(CAST((vn.p - uh.h + 1152921504606846976)
+                     % 1152921504606846976 AS VARCHAR), 19, '0')
+           || '|' || vn.node END) AS kb,
+         min(lpad(CAST((vn.p - uh.h + 1152921504606846976)
+                       % 1152921504606846976 AS VARCHAR), 19, '0')
+             || '|' || vn.node) AS ka
+  FROM uh CROSS JOIN vn GROUP BY uh.uid
+), hrw AS (
+  SELECT uh.uid,
+         max(CASE WHEN n.node <> 'n4' THEN
+           substr(md5('hrw:' || n.node || ':' || uh.uid), 1, 16)
+           || '|' || n.node END) AS kb,
+         max(substr(md5('hrw:' || n.node || ':' || uh.uid), 1, 16)
+             || '|' || n.node) AS ka
+  FROM uh CROSS JOIN (VALUES ('n0'),('n1'),('n2'),('n3'),('n4')) n(node)
+  GROUP BY uh.uid
+)
+SELECT CAST(r.uid AS BIGINT) AS user_id,
+       split_part(r.kb, '|', 2) AS ring_before,
+       split_part(r.ka, '|', 2) AS ring_after,
+       split_part(r.kb, '|', 2) <> split_part(r.ka, '|', 2) AS ring_moved,
+       (split_part(r.kb, '|', 2) = split_part(r.ka, '|', 2)
+        OR split_part(r.ka, '|', 2) = 'n4') AS ring_min_disruption,
+       split_part(w.kb, '|', 2) AS hrw_before,
+       split_part(w.ka, '|', 2) AS hrw_after,
+       split_part(w.kb, '|', 2) <> split_part(w.ka, '|', 2) AS hrw_moved,
+       (split_part(w.kb, '|', 2) = split_part(w.ka, '|', 2)
+        OR split_part(w.ka, '|', 2) = 'n4') AS hrw_min_disruption
+FROM ring r JOIN hrw w ON w.uid = r.uid
+"""
+
+
+@register("q_shard_placement_ring", _SHARD_RING_SQL)
+def q_shard_placement_ring(spark, sf_dir):
+    """Consistent-hash ring (16 virtual nodes per physical node, 60-bit
+    md5 positions, clockwise-successor ownership) and rendezvous/HRW
+    hashing (argmax of md5(node,key), the vnode-free alternative) assign
+    every distinct user to 4 shard nodes — then node n4 JOINS and both
+    assignments are recomputed, with the minimal-disruption theorem the
+    whole construction exists for PINNED per key: a key that changes
+    owner must land on the new node (moves between survivors would mean
+    re-sharding traffic proportional to K, not K/n). Both placements are
+    pure broadcast cross-joins (80 ring positions / 5 nodes) + one
+    per-key aggregate — the shard-routing primitive behind partition
+    assignment, cache placement and shuffle-service routing at 1000
+    executors, fully distributed, no collect. Clockwise distance and
+    argmin/argmax run on zero-padded fixed-width keys so lexicographic
+    min/max IS numeric order in both engines; ties (astronomically
+    unlikely 60-bit collisions) break on the node suffix identically."""
+    e = _t(spark, sf_dir, "events")
+    uh = (e.select(F.col("user_id").cast("string").alias("uid")).distinct()
+          .withColumn("h", F.conv(F.substring(F.md5(
+              F.concat(F.lit("key:"), F.col("uid"))), 1, 15), 16, 10)
+              .cast("long")))
+    nodes = spark.createDataFrame([(f"n{i}",) for i in range(5)],
+                                  "node string")
+    vn = (nodes.crossJoin(spark.range(16).select(
+              F.col("id").cast("string").alias("v")))
+          .withColumn("p", F.conv(F.substring(F.md5(F.concat_ws(
+              "", F.lit("vnode:"), F.col("node"), F.lit(":"),
+              F.col("v"))), 1, 15), 16, 10).cast("long")))
+    dist = (F.col("p") - F.col("h") + F.lit(_RING_M)) % F.lit(_RING_M)
+    rk = F.concat(F.lpad(dist.cast("string"), 19, "0"), F.lit("|"),
+                  F.col("node"))
+    ring = (uh.crossJoin(F.broadcast(vn)).withColumn("k", rk)
+            .groupBy("uid")
+            .agg(F.min(F.when(F.col("node") != "n4", F.col("k")))
+                 .alias("kb"),
+                 F.min("k").alias("ka")))
+    hk = F.concat(F.substring(F.md5(F.concat_ws(
+        "", F.lit("hrw:"), F.col("node"), F.lit(":"), F.col("uid"))),
+        1, 16), F.lit("|"), F.col("node"))
+    hrw = (uh.crossJoin(F.broadcast(nodes)).withColumn("k", hk)
+           .groupBy("uid")
+           .agg(F.max(F.when(F.col("node") != "n4", F.col("k")))
+                .alias("kb"),
+                F.max("k").alias("ka")))
+    own = lambda c: F.substring_index(c, "|", -1)  # noqa: E731
+    return (ring.join(hrw.withColumnRenamed("kb", "wb")
+                      .withColumnRenamed("ka", "wa"), "uid")
+            .select(
+                F.col("uid").cast("long").alias("user_id"),
+                own(F.col("kb")).alias("ring_before"),
+                own(F.col("ka")).alias("ring_after"),
+                (own(F.col("kb")) != own(F.col("ka"))).alias("ring_moved"),
+                ((own(F.col("kb")) == own(F.col("ka")))
+                 | (own(F.col("ka")) == F.lit("n4")))
+                .alias("ring_min_disruption"),
+                own(F.col("wb")).alias("hrw_before"),
+                own(F.col("wa")).alias("hrw_after"),
+                (own(F.col("wb")) != own(F.col("wa"))).alias("hrw_moved"),
+                ((own(F.col("wb")) == own(F.col("wa")))
+                 | (own(F.col("wa")) == F.lit("n4")))
+                .alias("hrw_min_disruption")))
+
+
+_MERKLE_SQL = """
+WITH RECURSIVE ev AS (
+  SELECT md5('ev:' || CAST(event_id AS VARCHAR) || ':'
+             || CAST(user_id AS VARCHAR) || ':' || event_type) AS eh,
+         md5('ex:' || CAST(event_id AS VARCHAR)) AS exh,
+         CAST(CAST(ts AS DATE) AS VARCHAR) AS day
+  FROM events
+), mn AS (
+  SELECT min(exh) AS mex FROM ev
+), exd AS (
+  SELECT min(CASE WHEN exh = (SELECT mex FROM mn) THEN day END)
+         AS excl_day
+  FROM ev
+), leaves AS (
+  SELECT day,
+         md5(string_agg(eh, '' ORDER BY eh)) AS ha,
+         md5(string_agg(CASE WHEN exh <> (SELECT mex FROM mn)
+                        THEN eh END, '' ORDER BY eh)) AS hb
+  FROM ev GROUP BY day
+), lv AS (
+  SELECT 0 AS level,
+         list(struct_pack(day := day, ha := ha, hb := hb)
+              ORDER BY day) AS l
+  FROM leaves
+  UNION ALL
+  SELECT level + 1,
+         list_transform(range(1, (len(l) + 1) // 2 + 1), i ->
+           struct_pack(
+             day := CAST(NULL AS VARCHAR),
+             ha := md5(l[CAST(2 * i - 1 AS INTEGER)].ha
+                       || l[CAST(least(2 * i, len(l)) AS INTEGER)].ha),
+             hb := md5(l[CAST(2 * i - 1 AS INTEGER)].hb
+                       || l[CAST(least(2 * i, len(l)) AS INTEGER)].hb)))
+  FROM lv WHERE len(l) > 1
+), nodes AS (
+  SELECT level, CAST(i - 1 AS INTEGER) AS idx,
+         l[CAST(i AS INTEGER)].day AS day,
+         l[CAST(i AS INTEGER)].ha AS h_a,
+         l[CAST(i AS INTEGER)].hb AS h_b,
+         l[CAST(i AS INTEGER)].ha <> l[CAST(i AS INTEGER)].hb AS differs
+  FROM lv, LATERAL (SELECT unnest(range(1, len(l) + 1)) AS i) t
+)
+SELECT CAST(level AS INTEGER) AS level, idx, day, h_a, h_b, differs,
+       CAST(sum(CASE WHEN differs THEN 1 ELSE 0 END)
+            OVER (PARTITION BY level) AS BIGINT) AS n_diff_level,
+       (level > 0 OR NOT differs
+        OR day = (SELECT excl_day FROM exd)) AS locate_ok
+FROM nodes
+"""
+
+
+@register("q_events_merkle_diff", _MERKLE_SQL)
+def q_events_merkle_diff(spark, sf_dir):
+    """Merkle-tree anti-entropy diff (the Dynamo/Cassandra repair and
+    rsync-catalog primitive) between two snapshots of the events table:
+    per-day leaf digests (md5 of the day's sorted per-row digests — one
+    distributed aggregate computes BOTH snapshots via a conditional
+    string-agg), snapshot B silently missing one md5-chosen row, then a
+    binary hash tree folded over the day-ordered leaves (odd lone child
+    promoted Bitcoin-style as md5(h||h)). Every tree node of every level
+    is emitted for both snapshots with the two properties that make
+    Merkle sync O(log n): exactly ONE differing node per level (the
+    ancestor path of the corrupted leaf — n_diff_level pinned 1 in
+    tests) and the differing leaf localizing to exactly the day of the
+    missing row (locate_ok PINNED per row). Leaf hashing is the
+    distributed part (per-day shuffle, scale-true: leaves are partition
+    digests, the per-partition lineage artifact of the checkpoint
+    design); the tree fold runs over ≤366 bounded partition digests.
+    Oracle: identical nested-list recursion, one level per step."""
+    import hashlib as _hl
+    e = _t(spark, sf_dir, "events")
+    eh = F.md5(F.concat_ws(":", F.lit("ev"),
+                           F.col("event_id").cast("string"),
+                           F.col("user_id").cast("string"),
+                           F.col("event_type")))
+    exh = F.md5(F.concat(F.lit("ex:"), F.col("event_id").cast("string")))
+    base = e.select(eh.alias("eh"), exh.alias("exh"),
+                    F.col("ts").cast("date").cast("string").alias("day"))
+    mn = base.agg(F.min("exh").alias("mex"))
+    j = base.crossJoin(F.broadcast(mn))
+    leaves = (j.groupBy("day").agg(
+        F.md5(F.array_join(F.sort_array(F.collect_list("eh")), ""))
+        .alias("ha"),
+        F.md5(F.array_join(F.sort_array(F.collect_list(
+            F.when(F.col("exh") != F.col("mex"), F.col("eh")))), ""))
+        .alias("hb"),
+        F.min(F.when(F.col("exh") == F.col("mex"), F.col("day")))
+        .alias("exd"))
+        .orderBy("day").collect())
+    excl_day = next(r["exd"] for r in leaves if r["exd"] is not None)
+    cur = [(r["day"], r["ha"], r["hb"]) for r in leaves]
+    md5 = lambda s: _hl.md5(s.encode()).hexdigest()  # noqa: E731
+    out, level = [], 0
+    while True:
+        ndiff = sum(1 for _, ha, hb in cur if ha != hb)
+        for idx, (day, ha, hb) in enumerate(cur):
+            differs = ha != hb
+            loc = (level > 0) or (not differs) or (day == excl_day)
+            out.append((level, idx, day, ha, hb, differs, ndiff, loc))
+        if len(cur) == 1:
+            break
+        cur = [(None,
+                md5(cur[i][1] + cur[min(i + 1, len(cur) - 1)][1]),
+                md5(cur[i][2] + cur[min(i + 1, len(cur) - 1)][2]))
+               for i in range(0, len(cur), 2)]
+        level += 1
+    return spark.createDataFrame(
+        out, "level int, idx int, day string, h_a string, h_b string,"
+             " differs boolean, n_diff_level long, locate_ok boolean")
+
+
+_ELIAS_FANO_SQL = """
+WITH lists AS (
+  SELECT 'type:' || event_type AS list_id, event_id AS x FROM events
+  UNION ALL
+  SELECT 'v100', event_id FROM events WHERE value >= 100
+  UNION ALL
+  SELECT 'v300', event_id FROM events WHERE value >= 300
+), uu AS (
+  SELECT max(event_id) + 1 AS u FROM events
+), px AS (
+  SELECT list_id, x,
+         row_number() OVER (PARTITION BY list_id ORDER BY x) - 1 AS i,
+         count(*) OVER (PARTITION BY list_id) AS n,
+         max(x) OVER (PARTITION BY list_id) AS mx,
+         (SELECT u FROM uu) AS u
+  FROM lists
+), ef AS (
+  SELECT list_id, x, i, n, mx, u,
+         greatest(length(bin(u // n)) - 1, 0) AS l
+  FROM px
+)
+SELECT list_id, CAST(i AS BIGINT) AS i, CAST(x AS BIGINT) AS x,
+       CAST(x // (CAST(1 AS BIGINT) << l) AS BIGINT) AS hi,
+       CAST(x % (CAST(1 AS BIGINT) << l) AS BIGINT) AS lo,
+       CAST(i + x // (CAST(1 AS BIGINT) << l) AS BIGINT) AS select_pos,
+       ((x // (CAST(1 AS BIGINT) << l)) * (CAST(1 AS BIGINT) << l)
+        + x % (CAST(1 AS BIGINT) << l)) = x AS recon_ok,
+       CAST(l AS INTEGER) AS l, CAST(n AS BIGINT) AS n_list,
+       CAST(u AS BIGINT) AS u,
+       CAST(n * l + n + mx // (CAST(1 AS BIGINT) << l) AS BIGINT)
+           AS total_bits,
+       (n * l + n + mx // (CAST(1 AS BIGINT) << l)) < n * (l + 3)
+           AS bound_ok
+FROM ef
+"""
+
+
+@register("search_elias_fano_postings", _ELIAS_FANO_SQL)
+def search_elias_fano_postings(spark, sf_dir):
+    """Elias-Fano encoding of monotone posting lists — the quasi-succinct
+    index representation inside modern search engines (Vigna 2013;
+    Lucene/Tantivy doc-id blocks): each sorted event-id list is split at
+    l = floor(log2(u/n)) bits (computed as length(bin(u div n))-1 — exact
+    integer bit math, no float log) into l explicit low bits plus a unary
+    high-bit vector in which the i-th element's 1 sits at position
+    i + (x_i >> l) — emitted as select_pos, the O(1)-access/select
+    identity. Three selectivity tiers exercise the split (per-type dense
+    lists, a ~13% filtered list, a ~0.2% rare list whose l jumps to ~9;
+    at the smallest scale the rare list is a single element — the n=1
+    edge). Per element the reconstruction (hi << l) | lo = x is pinned,
+    and per list the size bound total_bits < n*(l+3) — the 2 + log2(u/n)
+    bits/element quasi-succinct guarantee in integer form — is pinned
+    TRUE. Pure rank windows + expression math, fully distributed; the
+    partition key is the list id, exactly how a sharded index builder
+    would lay postings out."""
+    e = _t(spark, sf_dir, "events")
+    lists = (e.select(F.concat(F.lit("type:"), F.col("event_type"))
+                      .alias("list_id"), F.col("event_id").alias("x"))
+             .union(e.filter(F.col("value") >= 100)
+                    .select(F.lit("v100"), F.col("event_id")))
+             .union(e.filter(F.col("value") >= 300)
+                    .select(F.lit("v300"), F.col("event_id"))))
+    uu = e.agg((F.max("event_id") + 1).alias("u"))
+    wp = Window.partitionBy("list_id")
+    px = (lists
+          .select("list_id", "x",
+                  (F.row_number().over(wp.orderBy("x")) - 1).alias("i"),
+                  F.count(F.lit(1)).over(wp).alias("n"),
+                  F.max("x").over(wp).alias("mx"))
+          .crossJoin(F.broadcast(uu)))
+    ef = px.withColumn(
+        "l", F.greatest(F.length(F.bin(F.expr("u div n"))) - 1, F.lit(0)))
+    two_l = F.expr("shiftleft(CAST(1 AS BIGINT), l)")
+    hi = F.expr("x div shiftleft(CAST(1 AS BIGINT), l)")
+    lo = F.col("x") % two_l
+    mhi = F.expr("mx div shiftleft(CAST(1 AS BIGINT), l)")
+    return ef.select(
+        "list_id", F.col("i").cast("long").alias("i"),
+        F.col("x").cast("long").alias("x"),
+        hi.cast("long").alias("hi"), lo.cast("long").alias("lo"),
+        (F.col("i") + hi).cast("long").alias("select_pos"),
+        ((hi * two_l + lo) == F.col("x")).alias("recon_ok"),
+        F.col("l").cast("int").alias("l"),
+        F.col("n").cast("long").alias("n_list"),
+        F.col("u").cast("long").alias("u"),
+        (F.col("n") * F.col("l") + F.col("n") + mhi).cast("long")
+        .alias("total_bits"),
+        ((F.col("n") * F.col("l") + F.col("n") + mhi)
+         < F.col("n") * (F.col("l") + 3)).alias("bound_ok"))
+
+
 _AES_SQL = """
 WITH d AS (
   SELECT doc_id,
@@ -8025,6 +8343,1438 @@ def data_weighted_reservoir(spark, sf_dir):
                     F.col("n_docs").cast("long").alias("n_docs"),
                     (F.col("pr_e6") >= F.col("tau_e6"))
                     .alias("above_tau")))
+
+
+_FENWICK_SQL = """
+WITH days AS (
+  SELECT CAST(dense_rank() OVER (ORDER BY d) AS BIGINT) AS i,
+         c
+  FROM (SELECT CAST(ts AS DATE) AS d, count(*) AS c
+        FROM events GROUP BY 1)
+), px AS (
+  SELECT i, c, sum(c) OVER (ORDER BY i) AS prefix,
+         i - (i & (i - 1)) AS lb
+  FROM days
+), bit AS (
+  SELECT p.i, p.c, p.prefix, p.lb,
+         p.prefix - coalesce(q.prefix, 0) AS b
+  FROM px p LEFT JOIN px q ON q.i = p.i - p.lb
+), bd AS (
+  SELECT b.i, sum(d2.c) AS b_direct
+  FROM bit b JOIN days d2 ON d2.i > b.i - b.lb AND d2.i <= b.i
+  GROUP BY b.i
+), probes AS (
+  SELECT q,
+         sum(CASE WHEN t.i = q - (q % t.lb) THEN t.b ELSE 0 END) AS psum,
+         sum(CASE WHEN t.i = q - (q % t.lb) THEN 1 ELSE 0 END) AS pnodes
+  FROM (VALUES (5), (17), (23), (30)) v(q), bit t
+  GROUP BY q
+), pchk AS (
+  SELECT p.q, p.psum, p.pnodes,
+         p.psum = x.prefix AS sum_ok,
+         p.pnodes = bit_count(CAST(p.q AS BIGINT)) AS nodes_ok
+  FROM probes p JOIN px x ON x.i = p.q
+)
+SELECT CAST(t.i AS BIGINT) AS i, CAST(t.c AS BIGINT) AS c,
+       CAST(t.prefix AS BIGINT) AS prefix,
+       CAST(t.lb AS BIGINT) AS lowbit,
+       CAST(t.b AS BIGINT) AS b,
+       CAST(d.b_direct AS BIGINT) AS b_direct,
+       t.b = d.b_direct AS b_ok,
+       CAST(bit_count(CAST(t.i AS BIGINT)) AS INTEGER) AS bits,
+       (SELECT CAST(psum AS BIGINT) FROM pchk WHERE q = 5) AS p5_sum,
+       (SELECT sum_ok AND nodes_ok FROM pchk WHERE q = 5) AS p5_ok,
+       (SELECT CAST(psum AS BIGINT) FROM pchk WHERE q = 17) AS p17_sum,
+       (SELECT sum_ok AND nodes_ok FROM pchk WHERE q = 17) AS p17_ok,
+       (SELECT CAST(psum AS BIGINT) FROM pchk WHERE q = 23) AS p23_sum,
+       (SELECT sum_ok AND nodes_ok FROM pchk WHERE q = 23) AS p23_ok,
+       (SELECT CAST(psum AS BIGINT) FROM pchk WHERE q = 30) AS p30_sum,
+       (SELECT sum_ok AND nodes_ok FROM pchk WHERE q = 30) AS p30_ok
+FROM bit t JOIN bd d ON d.i = t.i
+"""
+
+
+@register("q_events_fenwick_tree", _FENWICK_SQL)
+def q_events_fenwick_tree(spark, sf_dir):
+    """Fenwick / binary-indexed tree over the daily event counts, built
+    WITHOUT any sequential pass: cell b_i = prefix(i) − prefix(i −
+    lowbit(i)) (lowbit via i − (i & (i−1)), no negative-AND semantics
+    to disagree on), then independently re-derived as a range join over
+    the raw days it covers — b_ok pins the two derivations equal. Prefix
+    queries at 4 probe positions use the closed-form chain-membership
+    test n = q − (q mod lowbit(n)) — the node set a sequential
+    lowbit-stripping walk would visit, recognized ARITHMETICALLY so the
+    whole decomposition is one conditional aggregate, no loop — with
+    both classic BIT theorems pinned: the decomposed sum equals the
+    direct prefix sum, and the node count equals popcount(q). The day
+    axis is bounded (~366); the counts underneath are one map-side-
+    combinable aggregate, so the structure scales as a partition-stats
+    index exactly like parquet row-group min/max trees."""
+    e = _t(spark, sf_dir, "events")
+    days = (e.groupBy(F.col("ts").cast("date").alias("d"))
+            .agg(F.count(F.lit(1)).alias("c"))
+            .select(F.dense_rank().over(Window.orderBy("d"))
+                    .cast("long").alias("i"), "c"))
+    px = days.select(
+        "i", "c", F.sum("c").over(Window.orderBy("i")).alias("prefix"),
+        F.expr("i - (i & (i - 1))").alias("lb"))
+    bit = (px.alias("p")
+           .join(px.select(F.col("i").alias("qi"),
+                           F.col("prefix").alias("qprefix")).alias("q"),
+                 F.expr("qi = i - lb"), "left")
+           .select("i", "c", "prefix", "lb",
+                   (F.col("prefix") - F.coalesce(F.col("qprefix"),
+                                                 F.lit(0))).alias("b")))
+    bd = (bit.alias("b")
+          .join(days.select(F.col("i").alias("di"),
+                            F.col("c").alias("dc")).alias("d2"),
+                F.expr("di > i - lb AND di <= i"))
+          .groupBy("i").agg(F.sum("dc").alias("b_direct")))
+    probes = spark.createDataFrame([(5,), (17,), (23,), (30,)], "q long")
+    pr = (probes.crossJoin(bit)
+          .groupBy("q")
+          .agg(F.sum(F.when(F.expr("i = q - (q % lb)"), F.col("b"))
+                     .otherwise(0)).alias("psum"),
+               F.sum(F.when(F.expr("i = q - (q % lb)"), F.lit(1))
+                     .otherwise(0)).alias("pnodes")))
+    pchk = (pr.join(px.select(F.col("i").alias("q"),
+                              F.col("prefix").alias("qpfx")), "q")
+            .select("q", "psum", "pnodes",
+                    (F.col("psum") == F.col("qpfx")).alias("sum_ok"),
+                    (F.col("pnodes") == F.bit_count(F.col("q")))
+                    .alias("nodes_ok")))
+    aggs = []
+    for q in (5, 17, 23, 30):
+        aggs.append(F.max(F.when(F.col("q") == q, F.col("psum")))
+                    .cast("long").alias(f"p{q}_sum"))
+        aggs.append(F.max(F.when(F.col("q") == q,
+                                 F.col("sum_ok") & F.col("nodes_ok")))
+                    .alias(f"p{q}_ok"))
+    pvt = pchk.agg(*aggs)
+    out = bit.join(bd, "i").crossJoin(F.broadcast(pvt))
+    return out.select(
+        F.col("i").cast("long"), F.col("c").cast("long").alias("c"),
+        F.col("prefix").cast("long").alias("prefix"),
+        F.col("lb").cast("long").alias("lowbit"),
+        F.col("b").cast("long").alias("b"),
+        F.col("b_direct").cast("long").alias("b_direct"),
+        (F.col("b") == F.col("b_direct")).alias("b_ok"),
+        F.bit_count("i").cast("int").alias("bits"),
+        "p5_sum", "p5_ok", "p17_sum", "p17_ok",
+        "p23_sum", "p23_ok", "p30_sum", "p30_ok")
+
+
+_CACHE_SQL = """
+WITH RECURSIVE acc AS (
+  SELECT row_number() OVER (ORDER BY event_id) AS p, item
+  FROM (SELECT event_id, user_id AS item
+        FROM events ORDER BY event_id LIMIT 300)
+), nx AS (
+  SELECT p, item,
+         coalesce(lead(p) OVER (PARTITION BY item ORDER BY p),
+                  1000000000 + item) AS nu
+  FROM acc
+), st AS (
+  SELECT 0 AS t, CAST(0 AS BIGINT) AS x,
+         false AS lru_hit, false AS opt_hit,
+         CAST(0 AS BIGINT) AS lh, CAST(0 AS BIGINT) AS oh,
+         CAST([] AS BIGINT[]) AS lru,
+         CAST([] AS STRUCT(x BIGINT, nu BIGINT)[]) AS opt,
+         (SELECT list(item ORDER BY p) FROM acc) AS xs,
+         (SELECT list(nu ORDER BY p) FROM nx) AS nxt
+  UNION ALL
+  SELECT s.t + 1, t0.x, t1.lhit, t2.ohit,
+         s.lh + CASE WHEN t1.lhit THEN 1 ELSE 0 END,
+         s.oh + CASE WHEN t2.ohit THEN 1 ELSE 0 END,
+         t1.nlru, t3.nopt, s.xs, s.nxt
+  FROM st s
+  CROSS JOIN LATERAL (
+    SELECT s.xs[CAST(s.t + 1 AS INTEGER)] AS x,
+           s.nxt[CAST(s.t + 1 AS INTEGER)] AS nu) t0
+  CROSS JOIN LATERAL (
+    SELECT list_contains(s.lru, t0.x) AS lhit,
+           (CASE WHEN list_contains(s.lru, t0.x)
+            THEN [t0.x] || list_filter(s.lru, y -> y <> t0.x)
+            ELSE ([t0.x] || s.lru)[1:8] END) AS nlru) t1
+  CROSS JOIN LATERAL (
+    SELECT len(list_filter(s.opt, e -> e.x = t0.x)) > 0 AS ohit) t2
+  CROSS JOIN LATERAL (
+    SELECT CASE
+      WHEN t2.ohit THEN
+        list_transform(s.opt, e -> CASE WHEN e.x = t0.x
+          THEN struct_pack(x := t0.x, nu := t0.nu) ELSE e END)
+      WHEN len(s.opt) < 8 THEN
+        s.opt || [struct_pack(x := t0.x, nu := t0.nu)]
+      ELSE
+        list_filter(s.opt, e -> e.nu <>
+          list_max(list_transform(s.opt, q -> q.nu)))
+        || [struct_pack(x := t0.x, nu := t0.nu)]
+      END AS nopt) t3
+  WHERE s.t < 300
+), fin AS (
+  SELECT lh AS flh, oh AS foh FROM st WHERE t = 300
+)
+SELECT CAST(s.t AS INTEGER) AS i, s.x AS item, s.lru_hit, s.opt_hit,
+       s.lh AS lru_hits, s.oh AS opt_hits,
+       (SELECT foh >= flh FROM fin) AS opt_ge_lru,
+       CAST(8 AS INTEGER) AS cache_size,
+       CAST((SELECT flh FROM fin) AS BIGINT) AS lru_total,
+       CAST((SELECT foh FROM fin) AS BIGINT) AS opt_total
+FROM st s WHERE s.t >= 1
+"""
+
+
+@register("q_events_cache_replacement", _CACHE_SQL)
+def q_events_cache_replacement(spark, sf_dir):
+    """LRU versus Belady's OPT (MIN) on the first 300 user accesses with
+    a size-8 cache — the cache-replacement duel every buffer-pool and
+    shuffle-fetch cache design starts from. LRU is the classic
+    move-to-front list; OPT evicts the resident item whose NEXT use is
+    farthest in the future, implemented with the standard pointer trick:
+    next-use positions are precomputed as one lead() window (position
+    of the item's next access, unique by construction; ∞ encoded as
+    10⁹+item so even never-again items evict deterministically), and
+    each cache entry carries its own next-use pointer which is simply
+    refreshed on access — no rescanning of the future at any step. The
+    full per-step trajectory is emitted (hits, running counts, one
+    wrong eviction anywhere shifts every later hit) with Belady's
+    optimality theorem pinned on every row: OPT's final hit count ≥
+    LRU's. Engine: bounded driver replay; oracle: identical recursion
+    carrying both cache states as lists."""
+    C = 8
+    rows = (_t(spark, sf_dir, "events").orderBy("event_id").limit(300)
+            .select(F.col("user_id").alias("item")).collect())
+    xs = [r["item"] for r in rows]
+    last_pos: dict = {}
+    nxt = [0] * len(xs)
+    for p in range(len(xs) - 1, -1, -1):
+        nxt[p] = last_pos.get(xs[p], 1000000000 + xs[p])
+        last_pos[xs[p]] = p + 1
+    lru: list = []
+    opt: list = []  # [item, next_use]
+    lh = oh = 0
+    out = []
+    for t, x in enumerate(xs, start=1):
+        nu = nxt[t - 1]
+        lhit = x in lru
+        if lhit:
+            lru = [x] + [y for y in lru if y != x]
+        else:
+            lru = ([x] + lru)[:C]
+        ohit = any(e[0] == x for e in opt)
+        if ohit:
+            opt = [[x, nu] if e[0] == x else e for e in opt]
+        elif len(opt) < C:
+            opt = opt + [[x, nu]]
+        else:
+            mx = max(e[1] for e in opt)
+            opt = [e for e in opt if e[1] != mx] + [[x, nu]]
+        lh += lhit
+        oh += ohit
+        out.append((t, x, lhit, ohit, lh, oh))
+    return spark.createDataFrame(
+        [(t, x, lht, oht, a, b, oh >= lh, C, lh, oh)
+         for t, x, lht, oht, a, b in out],
+        "i int, item long, lru_hit boolean, opt_hit boolean,"
+        " lru_hits long, opt_hits long, opt_ge_lru boolean,"
+        " cache_size int, lru_total long, opt_total long")
+
+
+_ROARING_SQL = """
+WITH ids AS (
+  SELECT event_type AS lst, event_id AS x FROM events
+), ch AS (
+  SELECT lst, x, x // 65536 AS chunk, x % 65536 AS low,
+         CASE WHEN lag(x) OVER (PARTITION BY lst, x // 65536
+                                ORDER BY x) = x - 1
+              THEN 0 ELSE 1 END AS run_start
+  FROM ids
+), co AS (
+  SELECT lst, chunk, count(*) AS n, sum(run_start) AS runs
+  FROM ch GROUP BY lst, chunk
+), sz AS (
+  SELECT lst, chunk, n, runs,
+         8 + 2 * n AS array_bytes,
+         8 + 8192 AS bitmap_bytes,
+         8 + 2 + 4 * runs AS run_bytes
+  FROM co
+), pick AS (
+  SELECT lst, chunk, n, runs, array_bytes, bitmap_bytes, run_bytes,
+         CASE
+           WHEN n <= 4096 AND array_bytes <= run_bytes THEN 'array'
+           WHEN run_bytes < bitmap_bytes
+                AND (n > 4096 OR run_bytes < array_bytes) THEN 'run'
+           ELSE 'bitmap' END AS container
+  FROM sz
+), tot AS (
+  SELECT sum(CASE container WHEN 'array' THEN array_bytes
+             WHEN 'run' THEN run_bytes ELSE bitmap_bytes END)
+         AS total_bytes,
+         sum(4 * n) AS plain_bytes
+  FROM pick
+)
+SELECT p.lst AS list_id, CAST(p.chunk AS BIGINT) AS chunk,
+       CAST(p.n AS BIGINT) AS n, CAST(p.runs AS BIGINT) AS runs,
+       CAST(p.array_bytes AS BIGINT) AS array_bytes,
+       CAST(p.bitmap_bytes AS BIGINT) AS bitmap_bytes,
+       CAST(p.run_bytes AS BIGINT) AS run_bytes,
+       p.container,
+       CAST(CASE p.container WHEN 'array' THEN p.array_bytes
+            WHEN 'run' THEN p.run_bytes
+            ELSE p.bitmap_bytes END AS BIGINT) AS chosen_bytes,
+       (CASE p.container WHEN 'array' THEN p.array_bytes
+        WHEN 'run' THEN p.run_bytes ELSE p.bitmap_bytes END)
+       <= least(CASE WHEN p.n <= 4096 THEN p.array_bytes
+                ELSE p.bitmap_bytes END, p.bitmap_bytes, p.run_bytes)
+       AS minimal_ok,
+       CAST(t.total_bytes AS BIGINT) AS total_bytes,
+       CAST(t.plain_bytes AS BIGINT) AS plain_bytes
+FROM pick p CROSS JOIN tot t
+"""
+
+
+@register("search_roaring_layout", _ROARING_SQL)
+def search_roaring_layout(spark, sf_dir):
+    """Roaring-bitmap container layout for the per-type event-id sets —
+    the compressed-bitmap format behind Lucene/Druid/ClickHouse filter
+    indexes: ids split into 2¹⁶-value chunks, each chunk choosing among
+    an array container (2 bytes/id, only legal ≤ 4096 ids), a fixed 8 KiB
+    bitmap, or a run container (4 bytes/run, runs counted exactly via
+    one lag window detecting x−1 gaps) — the genuine Roaring decision
+    rule, with the chosen container's minimality over the legal
+    alternatives pinned per chunk and corpus totals against plain 4-byte
+    ids riding every row. The selectivity regimes flip the decision by
+    scale: sparse per-type chunks pick arrays at small corpora and the
+    dense interleaved chunks at sf0.1 flip to bitmaps (interleaving
+    shatters runs, so run containers lose exactly as they do in
+    production). All grouping + window arithmetic, fully distributed by
+    (list, chunk) — the same key a sharded index builder partitions by."""
+    e = _t(spark, sf_dir, "events")
+    ch = (e.select(F.col("event_type").alias("lst"),
+                   F.col("event_id").alias("x"))
+          .withColumn("chunk", F.expr("x div 65536"))
+          .withColumn("run_start", F.when(
+              F.lag("x").over(Window.partitionBy("lst", "chunk")
+                              .orderBy("x")) == F.col("x") - 1, 0)
+              .otherwise(1)))
+    co = (ch.groupBy("lst", "chunk")
+          .agg(F.count(F.lit(1)).alias("n"),
+               F.sum("run_start").alias("runs")))
+    sz = (co.withColumn("array_bytes", 8 + 2 * F.col("n"))
+          .withColumn("bitmap_bytes", F.lit(8 + 8192))
+          .withColumn("run_bytes", 8 + 2 + 4 * F.col("runs")))
+    pick = sz.withColumn("container", F.when(
+        (F.col("n") <= 4096) & (F.col("array_bytes")
+                                <= F.col("run_bytes")), "array")
+        .when((F.col("run_bytes") < F.col("bitmap_bytes"))
+              & ((F.col("n") > 4096)
+                 | (F.col("run_bytes") < F.col("array_bytes"))), "run")
+        .otherwise("bitmap"))
+    chosen = (F.when(F.col("container") == "array", F.col("array_bytes"))
+              .when(F.col("container") == "run", F.col("run_bytes"))
+              .otherwise(F.col("bitmap_bytes")))
+    tot = pick.agg(F.sum(chosen).alias("total_bytes"),
+                   F.sum(4 * F.col("n")).alias("plain_bytes"))
+    return (pick.crossJoin(F.broadcast(tot))
+            .select(F.col("lst").alias("list_id"),
+                    F.col("chunk").cast("long").alias("chunk"),
+                    F.col("n").cast("long").alias("n"),
+                    F.col("runs").cast("long").alias("runs"),
+                    F.col("array_bytes").cast("long").alias("array_bytes"),
+                    F.col("bitmap_bytes").cast("long")
+                    .alias("bitmap_bytes"),
+                    F.col("run_bytes").cast("long").alias("run_bytes"),
+                    "container",
+                    chosen.cast("long").alias("chosen_bytes"),
+                    (chosen <= F.least(
+                        F.when(F.col("n") <= 4096, F.col("array_bytes"))
+                        .otherwise(F.col("bitmap_bytes")),
+                        F.col("bitmap_bytes"), F.col("run_bytes")))
+                    .alias("minimal_ok"),
+                    F.col("total_bytes").cast("long").alias("total_bytes"),
+                    F.col("plain_bytes").cast("long")
+                    .alias("plain_bytes")))
+
+
+_ZONEMAP_SQL = """
+WITH ev AS (
+  SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
+         CAST(floor(value * 100 + 0.5) AS BIGINT) AS v
+  FROM events
+), zm AS (
+  SELECT day, min(v) AS zmin, max(v) AS zmax, count(*) AS n,
+         sum(CASE WHEN v BETWEEN 0 AND 1000 THEN 1 ELSE 0 END) AS m1,
+         sum(CASE WHEN v BETWEEN 10000 AND 20000 THEN 1 ELSE 0 END)
+           AS m2,
+         sum(CASE WHEN v BETWEEN 40000 AND 50000 THEN 1 ELSE 0 END)
+           AS m3,
+         sum(CASE WHEN v BETWEEN 25000 AND 26000 THEN 1 ELSE 0 END)
+           AS m4
+  FROM ev GROUP BY day
+), px AS (
+  SELECT z.day, z.zmin, z.zmax, z.n, p.probe, p.lo, p.hi,
+         CASE p.probe WHEN 1 THEN z.m1 WHEN 2 THEN z.m2
+              WHEN 3 THEN z.m3 ELSE z.m4 END AS matches,
+         (z.zmax < p.lo OR z.zmin > p.hi) AS pruned
+  FROM zm z CROSS JOIN (VALUES (1, 0, 1000), (2, 10000, 20000),
+                               (3, 40000, 50000), (4, 25000, 26000))
+                       p(probe, lo, hi)
+)
+SELECT day, CAST(probe AS INTEGER) AS probe,
+       CAST(lo AS BIGINT) AS lo, CAST(hi AS BIGINT) AS hi,
+       CAST(zmin AS BIGINT) AS zmin_e2, CAST(zmax AS BIGINT) AS zmax_e2,
+       CAST(n AS BIGINT) AS n_rows, CAST(matches AS BIGINT) AS matches,
+       pruned,
+       NOT (pruned AND matches > 0) AS sound_ok,
+       (NOT pruned AND matches = 0) AS false_keep,
+       CAST(sum(CASE WHEN pruned THEN 1 ELSE 0 END)
+            OVER (PARTITION BY probe) AS BIGINT) AS pruned_parts,
+       CAST(sum(CASE WHEN NOT pruned AND matches = 0 THEN 1 ELSE 0 END)
+            OVER (PARTITION BY probe) AS BIGINT) AS false_keeps,
+       CAST(count(*) OVER (PARTITION BY probe) AS BIGINT) AS total_parts
+FROM px
+"""
+
+
+@register("q_events_zonemap_pruning", _ZONEMAP_SQL)
+def q_events_zonemap_pruning(spark, sf_dir):
+    """Zone-map (min/max statistics) partition pruning audit — the
+    mechanism behind parquet row-group skipping and every warehouse's
+    partition elimination: per day-partition min/max of the value
+    column (kept exact as cents), then four range probes of graded
+    selectivity decide prune/keep per partition, with the SOUNDNESS
+    contract pinned on every (partition, probe) row — a pruned
+    partition must contain ZERO matching rows (the exact match counts
+    for all four probes ride out of the SAME single aggregate pass as
+    the zone maps, so the audit costs no extra scan). The false-keep
+    count per probe (kept partitions with no matches — the clustering-
+    quality signal that motivates z-ordering) and pruned-partition
+    totals ride along as window columns. One map-side-combinable
+    aggregate + a 4-row broadcast: the exact plan shape of stats-based
+    pruning at any scale."""
+    e = _t(spark, sf_dir, "events")
+    v = F.floor(F.col("value") * 100 + 0.5).cast("long")
+    probes = [(1, 0, 1000), (2, 10000, 20000),
+              (3, 40000, 50000), (4, 25000, 26000)]
+    aggs = [F.min("v").alias("zmin"), F.max("v").alias("zmax"),
+            F.count(F.lit(1)).alias("n")]
+    for pid, lo, hi in probes:
+        aggs.append(F.sum(F.when(F.col("v").between(lo, hi), 1)
+                          .otherwise(0)).alias(f"m{pid}"))
+    zm = (e.select(F.col("ts").cast("date").cast("string").alias("day"),
+                   v.alias("v"))
+          .groupBy("day").agg(*aggs))
+    pdf = spark.createDataFrame(probes, "probe int, lo long, hi long")
+    px = (zm.crossJoin(F.broadcast(pdf))
+          .withColumn("matches",
+                      F.when(F.col("probe") == 1, F.col("m1"))
+                      .when(F.col("probe") == 2, F.col("m2"))
+                      .when(F.col("probe") == 3, F.col("m3"))
+                      .otherwise(F.col("m4")))
+          .withColumn("pruned", (F.col("zmax") < F.col("lo"))
+                      | (F.col("zmin") > F.col("hi"))))
+    wp = Window.partitionBy("probe")
+    return px.select(
+        "day", F.col("probe").cast("int").alias("probe"),
+        F.col("lo").cast("long"), F.col("hi").cast("long"),
+        F.col("zmin").cast("long").alias("zmin_e2"),
+        F.col("zmax").cast("long").alias("zmax_e2"),
+        F.col("n").cast("long").alias("n_rows"),
+        F.col("matches").cast("long").alias("matches"),
+        "pruned",
+        (~(F.col("pruned") & (F.col("matches") > 0))).alias("sound_ok"),
+        ((~F.col("pruned")) & (F.col("matches") == 0))
+        .alias("false_keep"),
+        F.sum(F.when(F.col("pruned"), 1).otherwise(0)).over(wp)
+        .cast("long").alias("pruned_parts"),
+        F.sum(F.when((~F.col("pruned")) & (F.col("matches") == 0), 1)
+              .otherwise(0)).over(wp).cast("long").alias("false_keeps"),
+        F.count(F.lit(1)).over(wp).cast("long").alias("total_parts"))
+
+
+_LSM_SQL = """
+WITH RECURSIVE fl AS (
+  SELECT CAST(dense_rank() OVER (ORDER BY d) AS BIGINT) AS i, c AS sz
+  FROM (SELECT CAST(ts AS DATE) AS d, count(*) AS c
+        FROM events GROUP BY 1)
+), tot AS (
+  SELECT sum(sz) AS total, count(*) AS nf,
+         sum(sz) // 10 AS l1max
+  FROM fl
+), st AS (
+  SELECT 0 AS t, CAST(0 AS BIGINT) AS lw, CAST(0 AS BIGINT) AS tw,
+         CAST(0 AS BIGINT) AS l1, CAST(0 AS BIGINT) AS l2,
+         list_transform(range(1, 7), x ->
+           struct_pack(cnt := CAST(0 AS BIGINT),
+                       sz := CAST(0 AS BIGINT))) AS tiers,
+         CAST(0 AS BIGINT) AS lstep, CAST(0 AS BIGINT) AS tstep,
+         (SELECT list(sz ORDER BY i) FROM fl) AS xs
+  UNION ALL
+  SELECT s.t + 1, s.lw + lv.wr, s.tw + t0.f + tb.w1 + tc.w2,
+         lv.nl1, lv.nl2, tc.tr2, lv.wr, t0.f + tb.w1 + tc.w2, s.xs
+  FROM st s
+  CROSS JOIN LATERAL (
+    SELECT s.xs[CAST(s.t + 1 AS INTEGER)] AS f) t0
+  CROSS JOIN LATERAL (
+    SELECT CASE WHEN s.l1 + t0.f > (SELECT l1max FROM tot)
+           THEN t0.f + s.l1 + (s.l1 + t0.f + s.l2)
+           ELSE t0.f + s.l1 END AS wr,
+           CASE WHEN s.l1 + t0.f > (SELECT l1max FROM tot)
+           THEN CAST(0 AS BIGINT) ELSE s.l1 + t0.f END AS nl1,
+           CASE WHEN s.l1 + t0.f > (SELECT l1max FROM tot)
+           THEN s.l2 + s.l1 + t0.f ELSE s.l2 END AS nl2) lv
+  CROSS JOIN LATERAL (
+    SELECT list_transform(s.tiers, (e, x) -> CASE WHEN x = 1
+             THEN struct_pack(cnt := e.cnt + 1, sz := e.sz + t0.f)
+             ELSE e END) AS tr0) ta
+  CROSS JOIN LATERAL (
+    SELECT ta.tr0[1].cnt AS c1, ta.tr0[1].sz AS s1) ta1
+  CROSS JOIN LATERAL (
+    SELECT CASE WHEN ta1.c1 >= 4 THEN ta1.s1
+           ELSE CAST(0 AS BIGINT) END AS w1,
+           CASE WHEN ta1.c1 >= 4 THEN
+             list_transform(ta.tr0, (e, x) -> CASE
+               WHEN x = 1 THEN struct_pack(cnt := CAST(0 AS BIGINT),
+                                           sz := CAST(0 AS BIGINT))
+               WHEN x = 2 THEN struct_pack(cnt := e.cnt + 1,
+                                           sz := e.sz + ta1.s1)
+               ELSE e END)
+           ELSE ta.tr0 END AS tr1) tb
+  CROSS JOIN LATERAL (
+    SELECT tb.tr1[2].cnt AS c2, tb.tr1[2].sz AS s2) tb1
+  CROSS JOIN LATERAL (
+    SELECT CASE WHEN tb1.c2 >= 4
+           THEN tb1.s2 ELSE CAST(0 AS BIGINT) END AS w2,
+           CASE WHEN tb1.c2 >= 4 THEN
+             list_transform(tb.tr1, (e, x) -> CASE
+               WHEN x = 2 THEN struct_pack(cnt := CAST(0 AS BIGINT),
+                                           sz := CAST(0 AS BIGINT))
+               WHEN x = 3 THEN struct_pack(cnt := e.cnt + 1,
+                                           sz := e.sz + tb1.s2)
+               ELSE e END)
+           ELSE tb.tr1 END AS tr2) tc
+  WHERE s.t < (SELECT nf FROM tot)
+), fin AS (
+  SELECT lw, tw, l1, l2,
+         tiers[1].sz + tiers[2].sz + tiers[3].sz + tiers[4].sz
+           + tiers[5].sz + tiers[6].sz AS tiered_stored
+  FROM st WHERE t = (SELECT nf FROM tot)
+)
+SELECT CAST(s.t AS INTEGER) AS flush,
+       s.xs[CAST(s.t AS INTEGER)] AS bytes_in,
+       s.lstep AS leveled_written, s.tstep AS tiered_written,
+       s.lw AS leveled_cum, s.tw AS tiered_cum,
+       CAST((SELECT lw FROM fin) * 1000000
+            // (SELECT total FROM tot) AS BIGINT) AS wa_leveled_e6,
+       CAST((SELECT tw FROM fin) * 1000000
+            // (SELECT total FROM tot) AS BIGINT) AS wa_tiered_e6,
+       (SELECT lw FROM fin) >= (SELECT tw FROM fin)
+         AS leveled_writes_more,
+       (SELECT l1 + l2 FROM fin) = (SELECT total FROM tot)
+         AS leveled_conserved,
+       (SELECT tiered_stored FROM fin) = (SELECT total FROM tot)
+         AS tiered_conserved
+FROM st s WHERE s.t >= 1
+"""
+
+
+@register("q_events_lsm_compaction", _LSM_SQL)
+def q_events_lsm_compaction(spark, sf_dir):
+    """LSM compaction strategy duel — leveled (RocksDB-style: every
+    flush rewrites L1, overflow past total/10 pushes the whole of L1
+    into L2 rewriting both) versus size-tiered (Cassandra/universal:
+    4 runs per tier trigger a tier merge cascading upward), replayed
+    over the 30 daily flush sizes with per-flush write costs, both
+    cumulative write totals, and the e6 write-amplification factors.
+    Pinned: byte conservation in BOTH final structures (stored ==
+    ingested — a compaction that loses or duplicates bytes is wrong),
+    and the structural trade every storage-engine paper states —
+    leveled writes more than tiered on the same ingest (it buys read
+    amplification with write amplification; deterministic here and
+    stable across scales since flush sizes scale proportionally).
+    Flush sizes are one map-side day aggregate; the 30-step state
+    machine is bounded planner work. Engine: driver replay; oracle:
+    identical recursion with per-tier (count, size) state and the
+    two-level cascade unrolled (tier counts never exceed level 3 at
+    30 flushes of 4-fold fanout)."""
+    e = _t(spark, sf_dir, "events")
+    days = (e.groupBy(F.col("ts").cast("date").alias("d"))
+            .agg(F.count(F.lit(1)).alias("c")).orderBy("d").collect())
+    xs = [int(r["c"]) for r in days]
+    total = sum(xs)
+    l1max = total // 10
+    l1 = l2 = lw = tw = 0
+    tiers = [[0, 0] for _ in range(6)]  # [cnt, sz]
+    rows = []
+    for t, f in enumerate(xs, start=1):
+        # leveled
+        if l1 + f > l1max:
+            lstep = f + l1 + (l1 + f + l2)
+            l2 += l1 + f
+            l1 = 0
+        else:
+            lstep = f + l1
+            l1 += f
+        lw += lstep
+        # tiered: flush into tier 0 (cost f), cascade merges
+        tstep = f
+        tiers[0][0] += 1
+        tiers[0][1] += f
+        if tiers[0][0] >= 4:
+            tstep += tiers[0][1]
+            tiers[1][0] += 1
+            tiers[1][1] += tiers[0][1]
+            tiers[0] = [0, 0]
+            if tiers[1][0] >= 4:
+                tstep += tiers[1][1]
+                tiers[2][0] += 1
+                tiers[2][1] += tiers[1][1]
+                tiers[1] = [0, 0]
+        tw += tstep
+        rows.append((t, f, lstep, tstep, lw, tw))
+    stored = sum(s for _, s in tiers)
+    out = [(t, f, ls, ts_, lc, tc,
+            lw * 1000000 // total, tw * 1000000 // total,
+            lw >= tw, l1 + l2 == total, stored == total)
+           for t, f, ls, ts_, lc, tc in rows]
+    return spark.createDataFrame(
+        out, "flush int, bytes_in long, leveled_written long,"
+             " tiered_written long, leveled_cum long, tiered_cum long,"
+             " wa_leveled_e6 long, wa_tiered_e6 long,"
+             " leveled_writes_more boolean, leveled_conserved boolean,"
+             " tiered_conserved boolean")
+
+
+_RH_N = 200     # keys (doc_ids < 200)
+_RH_M = 256     # table slots
+
+
+_ROBINHOOD_SQL = """
+WITH RECURSIVE keys AS (
+  SELECT doc_id,
+         CAST(concat('0x', substr(md5('rh:' || CAST(doc_id AS VARCHAR)),
+                                  1, 15)) AS BIGINT) % 256 AS home
+  FROM documents WHERE doc_id < 200
+), lp AS (
+  -- literal FCFS linear probing, one key per step (order-dependent)
+  SELECT 0 AS t, list_transform(range(1, 257), x ->
+           CAST(-1 AS BIGINT)) AS slots,
+         (SELECT list(doc_id ORDER BY doc_id) FROM keys) AS ids,
+         (SELECT list(home ORDER BY doc_id) FROM keys) AS homes
+  UNION ALL
+  SELECT s.t + 1, t2.ns, s.ids, s.homes
+  FROM lp s
+  CROSS JOIN LATERAL (
+    SELECT s.ids[CAST(s.t + 1 AS INTEGER)] AS id,
+           s.homes[CAST(s.t + 1 AS INTEGER)] AS home) t0
+  CROSS JOIN LATERAL (
+    SELECT list_min(list_transform(s.slots, (e, i) ->
+             CASE WHEN e = -1
+             THEN (i - 1 - t0.home + 256) % 256 ELSE 999 END)) AS d) t1
+  CROSS JOIN LATERAL (
+    SELECT ((t0.home + t1.d) % 256) + 1 AS pos) t1b
+  CROSS JOIN LATERAL (
+    SELECT list_transform(s.slots, (e, i) ->
+             CASE WHEN i = t1b.pos THEN t0.id ELSE e END) AS ns) t2
+  WHERE s.t < 200
+), lpfin AS (
+  SELECT slots FROM lp WHERE t = 200
+), lpp AS (
+  SELECT CAST(e AS BIGINT) AS doc_id, CAST(i - 1 AS BIGINT) AS slot
+  FROM lpfin, LATERAL (
+    SELECT unnest(slots) AS e,
+           unnest(generate_series(1, len(slots))) AS i) u
+  WHERE e >= 0
+), hq AS (
+  SELECT g.h,
+         coalesce((SELECT list(k.doc_id ORDER BY k.doc_id)
+                   FROM keys k WHERE k.home = g.h), []) AS ids
+  FROM (SELECT unnest(range(0, 256)) AS h) g
+), rh AS (
+  -- ring-walk construction of the Robin Hood layout: keys join the
+  -- queue when the walk passes their home; the front of the FIFO
+  -- queue takes each slot. TWO laps with arrivals on both and only
+  -- lap-2 placements recorded: the simulated queue starts below the
+  -- stationary one and couples with it at the first truly-empty slot
+  -- (one exists at 78% load), so lap 2 replays the exact cyclic
+  -- steady state that wraparound runs require.
+  SELECT 0 AS w,
+         CAST([] AS BIGINT[]) AS q,
+         CAST([] AS STRUCT(id BIGINT, slot BIGINT)[]) AS placed,
+         (SELECT list(ids ORDER BY h) FROM hq) AS perhome
+  UNION ALL
+  SELECT s.w + 1, t1.nq2, t1.nplaced, s.perhome
+  FROM rh s
+  CROSS JOIN LATERAL (
+    SELECT CASE WHEN s.w < 512
+           THEN s.q || s.perhome[CAST(s.w % 256 + 1 AS INTEGER)]
+           ELSE s.q END AS nq) t0
+  CROSS JOIN LATERAL (
+    SELECT CASE WHEN len(t0.nq) > 0 THEN t0.nq[2:CAST(len(t0.nq)
+             AS INTEGER)] ELSE t0.nq END AS nq2,
+           CASE WHEN len(t0.nq) > 0 AND s.w >= 256 THEN s.placed ||
+             [struct_pack(id := t0.nq[1],
+                          slot := CAST(s.w % 256 AS BIGINT))]
+           ELSE s.placed END AS nplaced) t1
+  WHERE s.w < 512 OR len(s.q) > 0
+), rhp AS (
+  -- wrapped-run keys appear twice (their lap-1 copy placed at the lap-2
+  -- start and their lap-2 copy placed in the drain) at the SAME slot —
+  -- the coupling argument's fixed point — so DISTINCT is exact
+  SELECT DISTINCT p.id AS doc_id, p.slot
+  FROM (SELECT placed FROM rh ORDER BY w DESC LIMIT 1) f,
+       LATERAL (SELECT unnest(placed) AS p) u
+), j AS (
+  SELECT k.doc_id, k.home,
+         l.slot AS lp_slot,
+         (l.slot - k.home + 256) % 256 AS lp_disp,
+         r.slot AS rh_slot,
+         (r.slot - k.home + 256) % 256 AS rh_disp
+  FROM keys k
+  JOIN lpp l ON l.doc_id = k.doc_id
+  JOIN rhp r ON r.doc_id = k.doc_id
+), tots AS (
+  SELECT sum(lp_disp) AS tlp, sum(rh_disp) AS trh,
+         sum(lp_disp * lp_disp) AS qlp,
+         sum(rh_disp * rh_disp) AS qrh,
+         max(lp_disp) AS mlp, max(rh_disp) AS mrh,
+         md5(string_agg(CAST(lp_slot AS VARCHAR), ','
+                        ORDER BY lp_slot)) AS slp,
+         md5(string_agg(CAST(rh_slot AS VARCHAR), ','
+                        ORDER BY rh_slot)) AS srh
+  FROM j
+)
+SELECT j.doc_id, CAST(j.home AS BIGINT) AS home,
+       CAST(j.lp_slot AS BIGINT) AS lp_slot,
+       CAST(j.lp_disp AS BIGINT) AS lp_disp,
+       CAST(j.rh_slot AS BIGINT) AS rh_slot,
+       CAST(j.rh_disp AS BIGINT) AS rh_disp,
+       CAST(t.tlp AS BIGINT) AS total_disp_lp,
+       CAST(t.trh AS BIGINT) AS total_disp_rh,
+       t.tlp = t.trh AS mean_equal_ok,
+       CAST(t.qlp AS BIGINT) AS sumsq_lp,
+       CAST(t.qrh AS BIGINT) AS sumsq_rh,
+       t.qrh <= t.qlp AS variance_ok,
+       t.slp = t.srh AS slots_equal_ok,
+       CAST(t.mlp AS BIGINT) AS max_disp_lp,
+       CAST(t.mrh AS BIGINT) AS max_disp_rh
+FROM j CROSS JOIN tots t
+"""
+
+
+@register("q_docs_robin_hood_probing", _ROBINHOOD_SQL)
+def q_docs_robin_hood_probing(spark, sf_dir):
+    """Robin Hood hashing versus FCFS linear probing on the same 200
+    md5-homed keys in a 256-slot table (78% load) — the open-addressing
+    duel behind every hash join and in-memory hash table, with all
+    three classic theorems PINNED from the data: (1) the occupied slot
+    SET is identical under any linear-probing reordering policy
+    (md5 of the sorted slot lists equal), (2) total (hence mean)
+    displacement is identical — reordering only redistributes it, and
+    (3) Robin Hood minimizes displacement VARIANCE, so its sum of
+    squares is ≤ FCFS's. The two engines compute Robin Hood by
+    DIFFERENT algorithms — the engine replays literal probe-and-swap
+    insertion (take from the rich: swap when the incoming key's current
+    distance exceeds the resident's, with a total-order tiebreak on id
+    for equal distances that makes the final layout HISTORY-INDEPENDENT
+    — the canonical-RH property), the oracle runs the O(m) ring-walk
+    construction (keys enqueue as the walk passes their home,
+    earliest-home-then-id takes each slot; TWO laps with only lap-2
+    placements recorded, because the simulated queue starts below the
+    cyclic steady state and provably couples with it at the first
+    truly-empty slot — the wraparound-run fix) — so the value-hash
+    equality of the correctness gate doubles as a machine-checked proof
+    that the walk reproduces the swap semantics. FCFS is replayed
+    literally in both (it IS order-dependent)."""
+    ks = sorted((r["doc_id"],
+                 int(__import__("hashlib").md5(
+                     f"rh:{r['doc_id']}".encode()).hexdigest()[:15], 16)
+                 % _RH_M)
+                for r in _t(spark, sf_dir, "documents")
+                .filter(F.col("doc_id") < _RH_N)
+                .select("doc_id").collect())
+    # FCFS linear probing
+    lp_slots = [-1] * _RH_M
+    lp_pos = {}
+    for did, home in ks:
+        d = 0
+        while lp_slots[(home + d) % _RH_M] != -1:
+            d += 1
+        lp_slots[(home + d) % _RH_M] = did
+        lp_pos[did] = (home + d) % _RH_M
+    # Robin Hood: literal probe-and-swap
+    rh_slots: list = [None] * _RH_M
+    for did, home in ks:
+        cid, chome, d = did, home, 0
+        while True:
+            pos = (chome + d) % _RH_M
+            res = rh_slots[pos]
+            if res is None:
+                rh_slots[pos] = (cid, chome)
+                break
+            rdisp = (pos - res[1] + _RH_M) % _RH_M
+            # total-order tiebreak (distance, then id): equal distance
+            # implies equal home, and smaller id wins the slot — this
+            # makes the final layout HISTORY-INDEPENDENT (canonical),
+            # which is exactly what the oracle's ring walk computes
+            if rdisp < d or (rdisp == d and res[0] > cid):
+                rh_slots[pos] = (cid, chome)
+                cid, chome = res
+                d = rdisp
+            d += 1
+    rh_pos = {cid: pos for pos, v in enumerate(rh_slots)
+              if v is not None for cid, _ in [v]}
+    tlp = sum((lp_pos[i] - h + _RH_M) % _RH_M for i, h in ks)
+    trh = sum((rh_pos[i] - h + _RH_M) % _RH_M for i, h in ks)
+    qlp = sum(((lp_pos[i] - h + _RH_M) % _RH_M) ** 2 for i, h in ks)
+    qrh = sum(((rh_pos[i] - h + _RH_M) % _RH_M) ** 2 for i, h in ks)
+    mlp = max((lp_pos[i] - h + _RH_M) % _RH_M for i, h in ks)
+    mrh = max((rh_pos[i] - h + _RH_M) % _RH_M for i, h in ks)
+    import hashlib as _hl
+    slp = _hl.md5(",".join(str(s) for s in
+                           sorted(lp_pos.values())).encode()).hexdigest()
+    srh = _hl.md5(",".join(str(s) for s in
+                           sorted(rh_pos.values())).encode()).hexdigest()
+    rows = [(did, home, lp_pos[did],
+             (lp_pos[did] - home + _RH_M) % _RH_M, rh_pos[did],
+             (rh_pos[did] - home + _RH_M) % _RH_M,
+             tlp, trh, tlp == trh, qlp, qrh, qrh <= qlp, slp == srh,
+             mlp, mrh) for did, home in ks]
+    return spark.createDataFrame(
+        rows, "doc_id long, home long, lp_slot long, lp_disp long,"
+              " rh_slot long, rh_disp long, total_disp_lp long,"
+              " total_disp_rh long, mean_equal_ok boolean,"
+              " sumsq_lp long, sumsq_rh long, variance_ok boolean,"
+              " slots_equal_ok boolean, max_disp_lp long,"
+              " max_disp_rh long")
+
+
+_BPTREE_SQL = """
+WITH RECURSIVE ks AS (
+  SELECT doc_id, row_number() OVER (ORDER BY doc_id) - 1 AS rk
+  FROM documents
+), nn AS (
+  SELECT count(*) AS n FROM ks
+), cnt AS (
+  SELECT 0 AS level, (SELECT (n + 7) // 8 FROM nn) AS c
+  UNION ALL
+  SELECT level + 1, (c + 7) // 8 FROM cnt WHERE c > 1
+), nodes AS (
+  SELECT c.level, CAST(i AS BIGINT) AS idx, c.c AS level_count,
+         CAST(power(8, c.level + 1) AS BIGINT) AS span
+  FROM cnt c, LATERAL (SELECT unnest(range(0, c.c)) AS i) u
+), nd AS (
+  SELECT n.level, n.idx, n.level_count,
+         n.span * n.idx AS lo_rk,
+         least((SELECT nn.n FROM nn), n.span * (n.idx + 1)) - 1 AS hi_rk,
+         CASE WHEN n.level = 0
+           THEN least(CAST(8 AS BIGINT),
+                      (SELECT nn.n FROM nn) - 8 * n.idx)
+           ELSE least(CAST(8 AS BIGINT),
+                      (SELECT c2.c FROM cnt c2
+                       WHERE c2.level = n.level - 1) - 8 * n.idx)
+         END AS n_entries
+  FROM nodes n
+), res AS (
+  SELECT d.level, d.idx, d.n_entries,
+         kl.doc_id AS min_key, kh.doc_id AS max_key,
+         d.level_count,
+         (d.n_entries = 8 OR d.idx = d.level_count - 1) AS full_ok
+  FROM nd d
+  JOIN ks kl ON kl.rk = d.lo_rk
+  JOIN ks kh ON kh.rk = d.hi_rk
+)
+SELECT r.level, r.idx, CAST(r.n_entries AS BIGINT) AS n_entries,
+       r.min_key, r.max_key, r.full_ok,
+       coalesce(r.level = 0 OR r.min_key = ch.min_key, false)
+         AS sep_ok,
+       CAST((SELECT max(level) FROM cnt) + 1 AS INTEGER) AS height,
+       CAST((SELECT n FROM nn) AS BIGINT) AS n_keys,
+       (SELECT c FROM cnt WHERE level = (SELECT max(level) FROM cnt))
+         = 1 AS root_single_ok
+FROM res r
+LEFT JOIN res ch ON ch.level = r.level - 1 AND ch.idx = r.idx * 8
+"""
+
+
+@register("q_docs_bptree_bulkload", _BPTREE_SQL)
+def q_docs_bptree_bulkload(spark, sf_dir):
+    """B+-tree bulk load over the sorted document keys (leaf capacity 8,
+    fanout 8) — the index-build path every database uses for sorted
+    ingest, computed entirely in CLOSED FORM: node (L, i) covers key
+    ranks [8^(L+1)·i, 8^(L+1)·(i+1)), so per-node entry counts,
+    min/max keys and level populations are rank arithmetic plus one
+    rank→key join — no insertion replay, no recursion over keys (the
+    only recursion is the ≤5-row level-count sequence c_{i+1} =
+    ⌈c_i/8⌉). Pins per node: bulk-load full-fill (every node holds
+    exactly 8 entries except the last of its level), separator
+    correctness via a REAL parent-child join (each internal node's min
+    key equals its first child's min key), and the single-root
+    property. Emits the whole node directory — the page-level layout a
+    bulk loader would write — with height and key count as constants.
+    Rank windows + equi-joins: fully distributed, and the same closed
+    form holds at 10^9 keys per partition-local subtree."""
+    ks = (_t(spark, sf_dir, "documents")
+          .select("doc_id",
+                  (F.row_number().over(Window.orderBy("doc_id")) - 1)
+                  .alias("rk")))
+    n = ks.count()
+    counts, c, lvl = [], (n + 7) // 8, 0
+    while True:
+        counts.append((lvl, c))
+        if c <= 1:
+            break
+        c = (c + 7) // 8
+        lvl += 1
+    height = len(counts)
+    nodes = []
+    for L, cL in counts:
+        span = 8 ** (L + 1)
+        prev = n if L == 0 else counts[L - 1][1]
+        unit = 8
+        for i in range(cL):
+            ne = min(unit, prev - unit * i)
+            nodes.append((L, i, cL, span * i,
+                          min(n, span * (i + 1)) - 1, ne))
+    nd = spark.createDataFrame(
+        nodes, "level int, idx long, level_count long, lo_rk long,"
+               " hi_rk long, n_entries long")
+    res = (nd.join(F.broadcast(ks).withColumnRenamed("doc_id", "min_key")
+                   .withColumnRenamed("rk", "lo_rk2"),
+                   F.expr("lo_rk2 = lo_rk"))
+           .join(F.broadcast(ks).withColumnRenamed("doc_id", "max_key")
+                 .withColumnRenamed("rk", "hi_rk2"),
+                 F.expr("hi_rk2 = hi_rk"))
+           .select("level", "idx", "n_entries", "min_key", "max_key",
+                   ((F.col("n_entries") == 8)
+                    | (F.col("idx") == F.col("level_count") - 1))
+                   .alias("full_ok")))
+    ch = res.select(F.col("level").alias("cl"), F.col("idx").alias("ci"),
+                    F.col("min_key").alias("cmin"))
+    return (res.join(F.broadcast(ch),
+                     F.expr("cl = level - 1 AND ci = idx * 8"), "left")
+            .select("level", "idx",
+                    F.col("n_entries").cast("long").alias("n_entries"),
+                    "min_key", "max_key", "full_ok",
+                    F.coalesce((F.col("level") == 0)
+                               | (F.col("min_key") == F.col("cmin")),
+                               F.lit(False)).alias("sep_ok"),
+                    F.lit(height).cast("int").alias("height"),
+                    F.lit(n).cast("long").alias("n_keys"),
+                    F.lit(counts[-1][1] == 1).alias("root_single_ok")))
+
+
+_HAMMING_SQL = """
+WITH src AS (
+  SELECT doc_id, k,
+         ascii(substr(text, CAST(k AS INTEGER), 1)) % 16 AS nib,
+         CAST(concat('0x', substr(md5('he:' || CAST(doc_id AS VARCHAR)
+              || ':' || CAST(k AS VARCHAR)), 1, 15)) AS BIGINT) AS h
+  FROM documents, (SELECT unnest(range(1, 65)) AS k)
+  WHERE doc_id < 100 AND length(text) >= 64
+), enc AS (
+  SELECT doc_id, k, nib,
+         nib % 2 AS d1, (nib // 2) % 2 AS d2,
+         (nib // 4) % 2 AS d3, (nib // 8) % 2 AS d4,
+         k % 4 AS scenario, h
+  FROM src
+), cw AS (
+  SELECT *,
+         xor(xor(d1, d2), d4) AS p1,
+         xor(xor(d1, d3), d4) AS p2,
+         xor(xor(d2, d3), d4) AS p4
+  FROM enc
+), flip AS (
+  SELECT *,
+         xor(xor(xor(xor(xor(xor(p1, p2), d1), p4), d2), d3), d4)
+           AS p8,
+         CASE WHEN scenario = 1 THEN h % 8 + 1 ELSE 0 END AS f1,
+         CASE WHEN scenario = 2 THEN h % 8 + 1 ELSE 0 END AS f2a,
+         CASE WHEN scenario = 2
+           THEN (h % 8 + h // 8 % 7 + 1) % 8 + 1 ELSE 0 END AS f2b,
+         CASE WHEN scenario = 3 THEN 8 ELSE 0 END AS f3
+  FROM cw
+), rx AS (
+  SELECT doc_id, k, nib, scenario,
+         CASE WHEN f2a = 8 OR f2b = 8 OR f3 = 8 THEN xor(p8, 1)
+              WHEN f1 = 8 THEN xor(p8, 1) ELSE p8 END AS r8,
+         xor(p1, CASE WHEN f1 = 1 OR f2a = 1 OR f2b = 1
+                 THEN 1 ELSE 0 END) AS r1,
+         xor(p2, CASE WHEN f1 = 2 OR f2a = 2 OR f2b = 2
+                 THEN 1 ELSE 0 END) AS r2,
+         xor(d1, CASE WHEN f1 = 3 OR f2a = 3 OR f2b = 3
+                 THEN 1 ELSE 0 END) AS r3,
+         xor(p4, CASE WHEN f1 = 4 OR f2a = 4 OR f2b = 4
+                 THEN 1 ELSE 0 END) AS r4,
+         xor(d2, CASE WHEN f1 = 5 OR f2a = 5 OR f2b = 5
+                 THEN 1 ELSE 0 END) AS r5,
+         xor(d3, CASE WHEN f1 = 6 OR f2a = 6 OR f2b = 6
+                 THEN 1 ELSE 0 END) AS r6,
+         xor(d4, CASE WHEN f1 = 7 OR f2a = 7 OR f2b = 7
+                 THEN 1 ELSE 0 END) AS r7,
+         f1, f2a, f2b
+  FROM flip
+), syn AS (
+  SELECT *,
+         xor(xor(xor(r1, r3), r5), r7)
+         + 2 * xor(xor(xor(r2, r3), r6), r7)
+         + 4 * xor(xor(xor(r4, r5), r6), r7) AS s,
+         xor(xor(xor(xor(xor(xor(xor(r1, r2), r3), r4), r5), r6), r7),
+             r8) AS pchk
+  FROM rx
+), dec AS (
+  SELECT doc_id, k, nib, scenario, s, pchk, f1, f2a, f2b,
+         CASE WHEN s = 0 AND pchk = 1 THEN 'parity_fixed'
+              WHEN s = 0 THEN 'clean'
+              WHEN pchk = 1 THEN 'corrected'
+              ELSE 'double_detected' END
+           AS verdict,
+         CASE WHEN s > 0 AND pchk = 1 THEN
+           (CASE WHEN s = 3 THEN xor(r3, 1) ELSE r3 END)
+           + 2 * (CASE WHEN s = 5 THEN xor(r5, 1) ELSE r5 END)
+           + 4 * (CASE WHEN s = 6 THEN xor(r6, 1) ELSE r6 END)
+           + 8 * (CASE WHEN s = 7 THEN xor(r7, 1) ELSE r7 END)
+         ELSE r3 + 2 * r5 + 4 * r6 + 8 * r7 END AS decoded
+  FROM syn
+)
+SELECT doc_id, CAST(k AS INTEGER) AS k, CAST(nib AS INTEGER) AS nib,
+       CAST(scenario AS INTEGER) AS scenario,
+       CAST(s AS INTEGER) AS syndrome, CAST(pchk AS INTEGER) AS pchk,
+       verdict, CAST(decoded AS INTEGER) AS decoded,
+       CASE WHEN scenario = 2 THEN verdict = 'double_detected'
+            ELSE decoded = nib END AS secded_ok,
+       (scenario <> 1 OR f1 = 8 OR s = f1) AS syndrome_locates_ok
+FROM dec
+"""
+
+
+@register("data_hamming_secded", _HAMMING_SQL)
+def data_hamming_secded(spark, sf_dir):
+    """Hamming(7,4) + SECDED(8,4) — the single-error-correct /
+    double-error-detect code inside ECC RAM and storage checksums —
+    over the low nibbles of the first 64 characters of 100 documents,
+    with all four error scenarios planted per stripe (k mod 4): clean,
+    one md5-chosen bit flip anywhere in the 8-bit codeword, TWO
+    distinct flips, and a flip of the overall parity bit itself. The
+    SECDED contract is pinned per codeword: clean/single/parity-flip
+    rows must decode back to the original nibble (single errors
+    corrected AT the syndrome position — syndrome_locates_ok pins that
+    the syndrome equals the planted bit index), and double flips must
+    be DETECTED, never silently miscorrected. Pure bit arithmetic in
+    both engines (xor + integer div/mod — no bitmaps, no UDFs),
+    map-side over (doc, position): the embarrassingly parallel shape
+    of block-level integrity checking at any scale."""
+    docs = (_t(spark, sf_dir, "documents")
+            .filter((F.col("doc_id") < 100) & (F.length("text") >= 64)))
+    ks = spark.range(1, 65).select(F.col("id").cast("int").alias("k"))
+    src = (docs.crossJoin(F.broadcast(ks))
+           .select("doc_id", "k",
+                   (F.ascii(F.expr("substr(text, k, 1)")) % 16)
+                   .alias("nib"),
+                   F.conv(F.substring(F.md5(F.concat_ws(
+                       "", F.lit("he:"), F.col("doc_id").cast("string"),
+                       F.lit(":"), F.col("k").cast("string"))), 1, 15),
+                       16, 10).cast("long").alias("h")))
+    q = src.selectExpr(
+        "doc_id", "k", "nib", "h",
+        "nib % 2 AS d1", "(nib div 2) % 2 AS d2",
+        "(nib div 4) % 2 AS d3", "(nib div 8) % 2 AS d4",
+        "k % 4 AS scenario")
+    q = q.selectExpr(
+        "*", "d1 ^ d2 ^ d4 AS p1", "d1 ^ d3 ^ d4 AS p2",
+        "d2 ^ d3 ^ d4 AS p4")
+    q = q.selectExpr(
+        "*", "p1 ^ p2 ^ d1 ^ p4 ^ d2 ^ d3 ^ d4 AS p8",
+        "CASE WHEN scenario = 1 THEN h % 8 + 1 ELSE 0 END AS f1",
+        "CASE WHEN scenario = 2 THEN h % 8 + 1 ELSE 0 END AS f2a",
+        "CASE WHEN scenario = 2 THEN (h % 8 + h div 8 % 7 + 1) % 8 + 1"
+        " ELSE 0 END AS f2b",
+        "CASE WHEN scenario = 3 THEN 8 ELSE 0 END AS f3")
+    q = q.selectExpr(
+        "doc_id", "k", "nib", "scenario", "f1", "f2a", "f2b",
+        "CASE WHEN f2a = 8 OR f2b = 8 OR f3 = 8 THEN p8 ^ 1"
+        " WHEN f1 = 8 THEN p8 ^ 1 ELSE p8 END AS r8",
+        "p1 ^ (CASE WHEN f1 = 1 OR f2a = 1 OR f2b = 1 THEN 1 ELSE 0"
+        " END) AS r1",
+        "p2 ^ (CASE WHEN f1 = 2 OR f2a = 2 OR f2b = 2 THEN 1 ELSE 0"
+        " END) AS r2",
+        "d1 ^ (CASE WHEN f1 = 3 OR f2a = 3 OR f2b = 3 THEN 1 ELSE 0"
+        " END) AS r3",
+        "p4 ^ (CASE WHEN f1 = 4 OR f2a = 4 OR f2b = 4 THEN 1 ELSE 0"
+        " END) AS r4",
+        "d2 ^ (CASE WHEN f1 = 5 OR f2a = 5 OR f2b = 5 THEN 1 ELSE 0"
+        " END) AS r5",
+        "d3 ^ (CASE WHEN f1 = 6 OR f2a = 6 OR f2b = 6 THEN 1 ELSE 0"
+        " END) AS r6",
+        "d4 ^ (CASE WHEN f1 = 7 OR f2a = 7 OR f2b = 7 THEN 1 ELSE 0"
+        " END) AS r7")
+    q = q.selectExpr(
+        "*",
+        "(r1 ^ r3 ^ r5 ^ r7) + 2 * (r2 ^ r3 ^ r6 ^ r7)"
+        " + 4 * (r4 ^ r5 ^ r6 ^ r7) AS s",
+        "r1 ^ r2 ^ r3 ^ r4 ^ r5 ^ r6 ^ r7 ^ r8 AS pchk")
+    q = q.selectExpr(
+        "doc_id", "k", "nib", "scenario", "s", "pchk", "f1",
+        "CASE WHEN s = 0 AND pchk = 1 THEN 'parity_fixed'"
+        " WHEN s = 0 THEN 'clean' WHEN pchk = 1 THEN 'corrected'"
+        " ELSE 'double_detected' END AS verdict",
+        "CASE WHEN s > 0 AND pchk = 1 THEN"
+        " (CASE WHEN s = 3 THEN r3 ^ 1 ELSE r3 END)"
+        " + 2 * (CASE WHEN s = 5 THEN r5 ^ 1 ELSE r5 END)"
+        " + 4 * (CASE WHEN s = 6 THEN r6 ^ 1 ELSE r6 END)"
+        " + 8 * (CASE WHEN s = 7 THEN r7 ^ 1 ELSE r7 END)"
+        " ELSE r3 + 2 * r5 + 4 * r6 + 8 * r7 END AS decoded")
+    return q.selectExpr(
+        "doc_id", "CAST(k AS INT) AS k", "CAST(nib AS INT) AS nib",
+        "CAST(scenario AS INT) AS scenario", "CAST(s AS INT) AS syndrome",
+        "CAST(pchk AS INT) AS pchk", "verdict",
+        "CAST(decoded AS INT) AS decoded",
+        "CASE WHEN scenario = 2 THEN verdict = 'double_detected'"
+        " ELSE decoded = nib END AS secded_ok",
+        "(scenario <> 1 OR f1 = 8 OR s = f1) AS syndrome_locates_ok")
+
+
+# ---- Reed-Solomon RS(6,4) erasure coding over GF(256), poly 0x11d ----
+
+_GF_EXP = [0] * 256
+_GF_LOG = [0] * 256
+
+
+def _gf_init():
+    x = 1
+    for i in range(255):
+        _GF_EXP[i] = x
+        _GF_LOG[x] = i
+        x <<= 1
+        if x >= 256:
+            x ^= 0x11D
+    _GF_EXP[255] = _GF_EXP[0]
+
+
+_gf_init()
+
+
+def _gf_mul(a: int, b: int) -> int:
+    if a == 0 or b == 0:
+        return 0
+    return _GF_EXP[(_GF_LOG[a] + _GF_LOG[b]) % 255]
+
+
+def _gf_inv(a: int) -> int:
+    return _GF_EXP[(255 - _GF_LOG[a]) % 255]
+
+
+def _rs_constants():
+    """Code-structure constants shared by engine and oracle: the
+    Vandermonde generator row logs, the md5-chosen erasure pair, and
+    the Lagrange recovery/re-encode coefficient logs for that pair."""
+    import hashlib as _h
+    xs = [j + 1 for j in range(6)]                   # evaluation points
+    gen = [[pow_ for i in range(4)
+            for pow_ in [_gf_pow(xs[j], i)]] for j in range(6)]
+    h = int(_h.md5(b"rs:erasure").hexdigest()[:15], 16)
+    e1 = h % 6
+    e2 = (e1 + h // 6 % 5 + 1) % 6
+    surv = [j for j in range(6) if j not in (e1, e2)]
+    # Lagrange: data coeffs d_i = XOR_r L[r][i] * S_r over survivors
+    ys = [xs[j] for j in surv]
+    L = [[0] * 4 for _ in range(4)]
+    for r in range(4):
+        oth = [ys[t] for t in range(4) if t != r]
+        a, b, c = oth
+        sym = [_gf_mul(_gf_mul(a, b), c),
+               _gf_mul(a, b) ^ _gf_mul(b, c) ^ _gf_mul(c, a),
+               a ^ b ^ c, 1]
+        den = 1
+        for t in oth:
+            den = _gf_mul(den, ys[r] ^ t)
+        dinv = _gf_inv(den)
+        for i in range(4):
+            L[r][i] = _gf_mul(sym[i], dinv)
+    return xs, gen, e1, e2, surv, L
+
+
+def _gf_pow(x: int, e: int) -> int:
+    r = 1
+    for _ in range(e):
+        r = _gf_mul(r, x)
+    return r
+
+
+def _rs_gmul_sql(const: int, expr: str) -> str:
+    """SQL for gf_mul(const, expr) with a compile-time constant: one
+    log-table hop — el[ (log_const + log expr) mod 255 + 1 ]."""
+    if const == 0:
+        return "0"
+    lc = _GF_LOG[const]
+    if const == 1:
+        return f"({expr})"
+    return (f"(CASE WHEN ({expr}) = 0 THEN 0 ELSE "
+            f"el[CAST(({lc} + list_position(el, {expr}) - 1) % 255 + 1"
+            f" AS INTEGER)] END)")
+
+
+def _rs_sql() -> str:
+    xs, gen, e1, e2, surv, L = _rs_constants()
+    enc_cols = []
+    for j in range(6):
+        terms = [_rs_gmul_sql(gen[j][i], f"d{i}") for i in range(4)]
+        enc_cols.append(
+            f"xor(xor({terms[0]}, {terms[1]}),"
+            f" xor({terms[2]}, {terms[3]})) AS s{j}")
+    rec_cols = []
+    for i in range(4):
+        terms = [_rs_gmul_sql(L[r][i], f"s{surv[r]}") for r in range(4)]
+        rec_cols.append(
+            f"xor(xor({terms[0]}, {terms[1]}),"
+            f" xor({terms[2]}, {terms[3]})) AS rec{i}")
+    reenc = []
+    for nm, ej in (("re1", e1), ("re2", e2)):
+        terms = [_rs_gmul_sql(gen[ej][i], f"rec{i}") for i in range(4)]
+        reenc.append(
+            f"xor(xor({terms[0]}, {terms[1]}),"
+            f" xor({terms[2]}, {terms[3]})) AS {nm}")
+    return f"""
+WITH RECURSIVE gf AS (
+  SELECT 0 AS i, [CAST(1 AS BIGINT)] AS e
+  UNION ALL
+  SELECT i + 1, e || [CASE WHEN e[CAST(i + 1 AS INTEGER)] * 2 >= 256
+    THEN xor(e[CAST(i + 1 AS INTEGER)] * 2, 285)
+    ELSE e[CAST(i + 1 AS INTEGER)] * 2 END]
+  FROM gf WHERE i < 254
+), el_t AS (
+  SELECT e AS el FROM gf WHERE i = 254
+), doc AS (
+  SELECT string_agg(text, ' ' ORDER BY doc_id) AS text
+  FROM (SELECT doc_id, text FROM documents ORDER BY doc_id LIMIT 5)
+), data AS (
+  SELECT k.k,
+         ascii(substr(d.text, CAST(0 * 64 + k.k + 1 AS INTEGER), 1))
+           AS d0,
+         ascii(substr(d.text, CAST(1 * 64 + k.k + 1 AS INTEGER), 1))
+           AS d1,
+         ascii(substr(d.text, CAST(2 * 64 + k.k + 1 AS INTEGER), 1))
+           AS d2,
+         ascii(substr(d.text, CAST(3 * 64 + k.k + 1 AS INTEGER), 1))
+           AS d3,
+         el_t.el AS el
+  FROM doc d, (SELECT unnest(range(0, 64)) AS k) k, el_t
+), enc AS (
+  SELECT k, d0, d1, d2, d3, el,
+         {', '.join(enc_cols)}
+  FROM data
+), rec AS (
+  SELECT k, d0, d1, d2, d3, s0, s1, s2, s3, s4, s5, el,
+         {', '.join(rec_cols)}
+  FROM enc
+), ree AS (
+  SELECT *, {', '.join(reenc)}
+  FROM rec
+)
+SELECT CAST(k AS INTEGER) AS k,
+       CAST(d0 AS INTEGER) AS d0, CAST(d1 AS INTEGER) AS d1,
+       CAST(d2 AS INTEGER) AS d2, CAST(d3 AS INTEGER) AS d3,
+       CAST(s0 AS INTEGER) AS s0, CAST(s1 AS INTEGER) AS s1,
+       CAST(s2 AS INTEGER) AS s2, CAST(s3 AS INTEGER) AS s3,
+       CAST(s4 AS INTEGER) AS s4, CAST(s5 AS INTEGER) AS s5,
+       CAST({e1} AS INTEGER) AS erased1, CAST({e2} AS INTEGER)
+         AS erased2,
+       CAST(rec0 AS INTEGER) AS rec0, CAST(rec1 AS INTEGER) AS rec1,
+       CAST(rec2 AS INTEGER) AS rec2, CAST(rec3 AS INTEGER) AS rec3,
+       (rec0 = d0 AND rec1 = d1 AND rec2 = d2 AND rec3 = d3)
+         AS recover_ok,
+       (re1 = s{e1} AND re2 = s{e2}) AS reencode_ok
+FROM ree
+"""
+
+
+@register("data_rs_erasure", _rs_sql())
+def data_rs_erasure(spark, sf_dir):
+    """Reed-Solomon RS(6,4) erasure coding over GF(256) (poly 0x11d,
+    α=2) — the MDS code behind HDFS/S3/Ceph erasure-coded storage: 256
+    bytes of the first document split into 4 data shards, encoded into
+    6 by a Vandermonde evaluation at x=1..6 (any 4 of 6 rows
+    invertible — the MDS property), two md5-chosen shards ERASED, and
+    the data recovered from the survivors by Lagrange interpolation in
+    closed form — characteristic 2 kills every sign, so the recovery
+    coefficients are elementary symmetric polynomials over the
+    surviving nodes divided by Π(y_r − y_t), no Gaussian elimination
+    anywhere. Pinned per byte position: exact recovery of all four
+    data bytes from 4-of-6 (recover_ok — the erasure-tolerance
+    contract) and re-encoding the recovered data reproduces the two
+    erased shards bit-exactly (reencode_ok — consistency of the code).
+    The oracle builds the GF(256) exp table by a 255-step xtime
+    recursion and runs every multiply through one log-hop with
+    compile-time coefficient logs; the engine computes the same field
+    arithmetic in integer Python. Per-position math is embarrassingly
+    parallel — the per-stripe shape of erasure-coded object storage."""
+    txt = " ".join(
+        r["text"] for r in _t(spark, sf_dir, "documents")
+        .orderBy("doc_id").limit(5).collect())
+    xs, gen, e1, e2, surv, L = _rs_constants()
+    rows = []
+    for k in range(64):
+        d = [ord(txt[i * 64 + k]) for i in range(4)]
+        s = [0] * 6
+        for j in range(6):
+            acc = 0
+            for i in range(4):
+                acc ^= _gf_mul(gen[j][i], d[i])
+            s[j] = acc
+        rec = [0] * 4
+        for i in range(4):
+            acc = 0
+            for r in range(4):
+                acc ^= _gf_mul(L[r][i], s[surv[r]])
+            rec[i] = acc
+        re_ = []
+        for ej in (e1, e2):
+            acc = 0
+            for i in range(4):
+                acc ^= _gf_mul(gen[ej][i], rec[i])
+            re_.append(acc)
+        rows.append((k, d[0], d[1], d[2], d[3],
+                     s[0], s[1], s[2], s[3], s[4], s[5], e1, e2,
+                     rec[0], rec[1], rec[2], rec[3],
+                     rec == d, re_[0] == s[e1] and re_[1] == s[e2]))
+    return spark.createDataFrame(
+        rows, "k int, d0 int, d1 int, d2 int, d3 int, s0 int, s1 int,"
+              " s2 int, s3 int, s4 int, s5 int, erased1 int,"
+              " erased2 int, rec0 int, rec1 int, rec2 int, rec3 int,"
+              " recover_ok boolean, reencode_ok boolean")
+
+
+_CHBL_SQL = """
+WITH RECURSIVE uk AS (
+  SELECT CAST(user_id AS VARCHAR) AS uid
+  FROM (SELECT DISTINCT user_id FROM events
+        ORDER BY user_id LIMIT 200)
+), uh AS (
+  SELECT uid,
+         CAST(concat('0x', substr(md5('key:' || uid), 1, 15))
+              AS BIGINT) AS h
+  FROM uk
+), vn AS (
+  SELECT n.node, n.ni,
+         CAST(concat('0x', substr(md5('vnode:' || n.node || ':'
+              || CAST(v.v AS VARCHAR)), 1, 15)) AS BIGINT) AS p
+  FROM (VALUES ('n0', 0), ('n1', 1), ('n2', 2), ('n3', 3), ('n4', 4))
+       n(node, ni)
+  CROSS JOIN (SELECT unnest(range(0, 16)) AS v) v
+), dist AS (
+  SELECT uh.uid, uh.h, vn.ni,
+         min((vn.p - uh.h + 1152921504606846976)
+             % 1152921504606846976) AS d
+  FROM uh CROSS JOIN vn GROUP BY uh.uid, uh.h, vn.ni
+), pref AS (
+  SELECT uid, h, list(ni ORDER BY d) AS pf
+  FROM dist GROUP BY uid, h
+), seq AS (
+  SELECT uid, pf, row_number() OVER (ORDER BY CAST(uid AS BIGINT)) AS rn
+  FROM pref
+), kk AS (
+  SELECT count(*) AS nk,
+         (count(*) + 3) // 4 AS cap   -- ceil(1.25 * K / 5) = ceil(K/4)
+  FROM uk
+), st AS (
+  SELECT 0 AS t, list_transform(range(1, 6), x -> CAST(0 AS BIGINT))
+           AS loads,
+         CAST(NULL AS BIGINT) AS chosen, CAST(NULL AS INTEGER) AS rank_,
+         (SELECT cap FROM kk) AS cap
+  UNION ALL
+  SELECT s.t + 1, t2.nl, t2.ch, t2.rk, s.cap
+  FROM st s
+  JOIN seq q ON q.rn = s.t + 1
+  CROSS JOIN LATERAL (
+    SELECT list_min(list_filter(
+             list_transform(q.pf, (n, i) -> CASE
+               WHEN s.loads[CAST(n + 1 AS INTEGER)] < s.cap
+               THEN i * 10 + n ELSE NULL END),
+             x -> x IS NOT NULL)) AS code) t1
+  CROSS JOIN LATERAL (
+    SELECT t1.code % 10 AS ch, CAST(t1.code // 10 AS INTEGER) AS rk,
+           list_transform(s.loads, (l, i) -> CASE
+             WHEN i = t1.code % 10 + 1 THEN l + 1 ELSE l END) AS nl
+    ) t2
+  WHERE s.t < (SELECT nk FROM kk)
+), placed AS (
+  SELECT s.t, q.uid, s.chosen, s.rank_
+  FROM st s JOIN seq q ON q.rn = s.t
+  WHERE s.t >= 1
+), finl AS (
+  SELECT loads FROM st WHERE t = (SELECT nk FROM kk)
+)
+SELECT CAST(p.uid AS BIGINT) AS user_id,
+       'n' || CAST(p.chosen AS VARCHAR) AS node,
+       p.rank_ AS choice_rank,
+       CAST((SELECT cap FROM kk) AS BIGINT) AS cap,
+       CAST(f.loads[CAST(p.chosen + 1 AS INTEGER)] AS BIGINT)
+         AS node_load,
+       f.loads[CAST(p.chosen + 1 AS INTEGER)]
+         <= (SELECT cap FROM kk) AS cap_ok,
+       CAST(list_max(f.loads) AS BIGINT) AS max_load,
+       list_max(f.loads) <= (SELECT cap FROM kk) AS all_caps_ok,
+       CAST(f.loads[1] + f.loads[2] + f.loads[3] + f.loads[4]
+            + f.loads[5] AS BIGINT) AS total_placed,
+       f.loads[1] + f.loads[2] + f.loads[3] + f.loads[4] + f.loads[5]
+         = (SELECT nk FROM kk) AS conservation_ok
+FROM placed p CROSS JOIN finl f
+"""
+
+
+@register("q_shard_bounded_loads", _CHBL_SQL)
+def q_shard_bounded_loads(spark, sf_dir):
+    """Consistent hashing with bounded loads (Mirrokni-Thorup-Zadimoghaddam,
+    the Vitess/HAProxy variant): each key walks its ring-successor node
+    preference list (clockwise over the same 16-vnode/60-bit-md5 ring
+    as q_shard_placement_ring, nodes deduped by first vnode hit) and
+    lands on the FIRST node under the capacity ceiling ⌈1.25·K/5⌉ —
+    the cap that tames the Θ(log n/log log n) max-load of plain
+    consistent hashing to a constant factor. The guarantee is pinned
+    from the final state: no node exceeds the cap (all_caps_ok), every
+    key is placed (conservation), and each key's fallback depth
+    (choice_rank) is emitted so the overflow-walk distribution — the
+    price of boundedness — is visible in the result. Preference lists
+    are a distributed window+group computation (per-key min distance
+    per node, ranked); only the 200-step load fold is sequential, the
+    same bounded planner walk a router replays. Engine: driver fold;
+    oracle: identical recursion over the 5-slot load vector."""
+    import hashlib as _h
+
+    def h60(s):
+        return int(_h.md5(s.encode()).hexdigest()[:15], 16)
+    M = 1 << 60
+    uids = sorted(int(r["user_id"]) for r in
+                  _t(spark, sf_dir, "events")
+                  .select("user_id").distinct()
+                  .orderBy("user_id").limit(200).collect())
+    vns = [(ni, h60(f"vnode:n{ni}:{v}"))
+           for ni in range(5) for v in range(16)]
+    K = len(uids)
+    cap = (K + 3) // 4
+    loads = [0] * 5
+    out = []
+    for uid in uids:
+        h = h60(f"key:{uid}")
+        best = {}
+        for ni, p in vns:
+            d = (p - h + M) % M
+            if ni not in best or d < best[ni]:
+                best[ni] = d
+        pf = [ni for ni, _ in sorted(best.items(), key=lambda x: x[1])]
+        rk, ch = next((i + 1, n) for i, n in enumerate(pf)
+                      if loads[n] < cap)
+        loads[ch] += 1
+        out.append((uid, ch, rk))
+    total = sum(loads)
+    rows = [(uid, f"n{ch}", rk, cap, loads[ch], loads[ch] <= cap,
+             max(loads), max(loads) <= cap, total, total == K)
+            for uid, ch, rk in out]
+    return spark.createDataFrame(
+        rows, "user_id long, node string, choice_rank int, cap long,"
+              " node_load long, cap_ok boolean, max_load long,"
+              " all_caps_ok boolean, total_placed long,"
+              " conservation_ok boolean")
 
 
 _LENBATCH_SQL = """
@@ -8170,3 +9920,1575 @@ def _lb_batches(toks):
             cnt, mx = 1, t
         out.append(batch)
     return out
+
+
+# ---- Selinger join-order DP over the real TPC-H chain ----
+
+_SEL_TABLES = ["R", "N", "C", "O", "L"]
+_SEL_SEGS = [(i, j) for i in range(5) for j in range(i, 5)]
+
+
+def _sel_components(mask: int):
+    """Maximal runs of consecutive set bits of mask (chain components)."""
+    comps, i = [], 0
+    while i < 5:
+        if mask >> i & 1:
+            j = i
+            while j + 1 < 5 and mask >> (j + 1) & 1:
+                j += 1
+            comps.append((i, j))
+            i = j + 1
+        else:
+            i += 1
+    return comps
+
+
+def _sel_card_expr(mask: int) -> str:
+    return " * ".join(f"seg{i}{j}" for i, j in _sel_components(mask))
+
+
+def _sel_perms():
+    import itertools
+    return list(itertools.permutations(range(5)))
+
+
+def _selinger_sql() -> str:
+    seg_sql = {
+        (0, 0): "SELECT count(*) FROM region",
+        (1, 1): "SELECT count(*) FROM nation",
+        (2, 2): "SELECT count(*) FROM customer"
+                " WHERE c_mktsegment = 'BUILDING'",
+        (3, 3): "SELECT count(*) FROM orders"
+                " WHERE o_orderpriority = '1-URGENT'",
+        (4, 4): "SELECT count(*) FROM lineitem WHERE l_quantity >= 25",
+    }
+    frm = {
+        0: "region",
+        1: "nation",
+        2: "(SELECT * FROM customer WHERE c_mktsegment = 'BUILDING')"
+           " c",
+        3: "(SELECT * FROM orders WHERE o_orderpriority = '1-URGENT')"
+           " o",
+        4: "(SELECT * FROM lineitem WHERE l_quantity >= 25) l",
+    }
+    joins = {
+        (0, 1): "r_regionkey = n_regionkey",
+        (1, 2): "n_nationkey = c_nationkey",
+        (2, 3): "c_custkey = o_custkey",
+        (3, 4): "o_orderkey = l_orderkey",
+    }
+    for i, j in _SEL_SEGS:
+        if i == j:
+            continue
+        f = frm[i]
+        conds = []
+        for t in range(i + 1, j + 1):
+            f += f" JOIN {frm[t]} ON {joins[(t - 1, t)]}"
+        seg_sql[(i, j)] = f"SELECT count(*) FROM {f}"
+    seg_cols = ", ".join(
+        f"({seg_sql[(i, j)]}) AS seg{i}{j}" for i, j in _SEL_SEGS)
+    card_cols = ", ".join(
+        f"CAST({_sel_card_expr(m)} AS BIGINT) AS card{m}"
+        for m in range(1, 32))
+    # DP in popcount order; cost of singletons is 0
+    cost, plan = {}, {}
+    for t in range(5):
+        cost[1 << t] = "0"
+        plan[1 << t] = f"'{_SEL_TABLES[t]}'"
+    dp_cols = []
+    for size in range(2, 6):
+        for m in range(1, 32):
+            if bin(m).count("1") != size:
+                continue
+            cands = []
+            for t in range(5):
+                if m >> t & 1:
+                    pm = m ^ (1 << t)
+                    cands.append((t, f"({cost[pm]} + card{m})",
+                                  f"({plan[pm]} || '>' ||"
+                                  f" '{_SEL_TABLES[t]}')"))
+            cexpr = "least(" + ", ".join(c for _, c, _ in cands) + ")"
+            # deterministic argmin: first candidate (ascending t)
+            # attaining the least
+            pexpr = "CASE "
+            for t, c, p in cands:
+                pexpr += f"WHEN {c} = {cexpr} THEN {p} "
+            pexpr = pexpr.rstrip() + " END"
+            cost[m] = f"cost{m}"
+            plan[m] = f"plan{m}"
+            dp_cols.append(f"CAST({cexpr} AS BIGINT) AS cost{m}")
+            dp_cols.append(f"{pexpr} AS plan{m}")
+    # the dp CTE must see earlier cost/plan columns: chain by popcount
+    dp_ctes, prev = [], "cards"
+    for size in range(2, 6):
+        cols = []
+        for m in range(1, 32):
+            if bin(m).count("1") != size:
+                continue
+            idx = [i for i, c in enumerate(dp_cols)
+                   if c.endswith(f"AS cost{m}") or c.endswith(
+                       f"AS plan{m}")]
+            cols.extend(dp_cols[i] for i in idx)
+        dp_ctes.append(
+            f"dp{size} AS (SELECT *, {', '.join(cols)} FROM {prev})")
+        prev = f"dp{size}"
+    # brute force over the 120 left-deep orders
+    pcosts = []
+    for perm in _sel_perms():
+        msk, terms = 0, []
+        for k, t in enumerate(perm):
+            msk |= 1 << t
+            if k >= 1:
+                terms.append(f"card{msk}")
+        pcosts.append("(" + " + ".join(terms) + ")")
+    brute_min = "least(" + ", ".join(pcosts) + ")"
+    brute_max = "greatest(" + ", ".join(pcosts) + ")"
+    rows = []
+    for m in range(1, 32):
+        tbls = "".join(_SEL_TABLES[t] for t in range(5) if m >> t & 1)
+        c = cost[m] if bin(m).count("1") > 1 else "CAST(0 AS BIGINT)"
+        p = plan[m]
+        rows.append(
+            f"SELECT {m} AS mask, '{tbls}' AS tables,"
+            f" card{m} AS cardinality, CAST({c} AS BIGINT) AS best_cost,"
+            f" {p} AS best_plan, cost31 AS full_best,"
+            f" CAST({brute_min} AS BIGINT) AS brute_min,"
+            f" cost31 = {brute_min} AS dp_equals_brute,"
+            f" CAST({brute_max} AS BIGINT) AS worst_perm,"
+            f" CAST({brute_max} * 100 // cost31 AS BIGINT)"
+            f" AS worst_over_best_e2 FROM dp5")
+    return (f"WITH segs AS (SELECT {seg_cols}), "
+            f"cards AS (SELECT *, {card_cols} FROM segs), "
+            + ", ".join(dp_ctes) + " "
+            + " UNION ALL ".join(rows))
+
+
+@register("q_join_order_selinger", _selinger_sql())
+def q_join_order_selinger(spark, sf_dir):
+    """Selinger dynamic-programming join ordering (System R, the
+    algorithm inside every cost-based SQL optimizer) over the REAL
+    five-table TPC-H chain region-nation-customer-orders-lineitem with
+    genuine data-derived cardinalities: base filters (BUILDING
+    customers, 1-URGENT orders, quantity >= 25 lineitems) break FK
+    totality, the 15 connected sub-chain cardinalities are measured by
+    actual joins, and every disconnected subset costs the honest
+    cartesian product of its components. The DP minimizes the classic
+    sum-of-intermediate-cardinalities cost over left-deep orders and is
+    PINNED exactly optimal against a full brute-force enumeration of
+    all 120 join orders computed independently in both engines
+    (dp_equals_brute) — with the worst order's cost ratio emitted, the
+    number that is the entire reason cost-based optimizers exist. All
+    31 subsets are emitted with their best cost and argmin plan
+    (deterministic first-attaining tiebreak). The cardinality probes
+    are the distributed part (15 real join counts); the 32-state DP is
+    O(1) planner work, exactly where Catalyst runs it."""
+    # ONE action: the oracle's segs CTE verbatim over temp views, so
+    # all 15 sub-chain counts land in a single Spark job
+    for t in ("region", "nation", "customer", "orders", "lineitem"):
+        _t(spark, sf_dir, t).createOrReplaceTempView(f"_sel_{t}")
+    seg_select = _selinger_sql()
+    seg_select = seg_select[seg_select.index("WITH segs AS (SELECT ")
+                            + len("WITH segs AS (SELECT "):]
+    seg_select = seg_select[:seg_select.index("), cards AS")]
+    for t in ("region", "nation", "customer", "orders", "lineitem"):
+        seg_select = seg_select.replace(f"FROM {t}", f"FROM _sel_{t}")
+        seg_select = seg_select.replace(f"JOIN {t}", f"JOIN _sel_{t}")
+    row = spark.sql("SELECT " + seg_select).collect()[0]
+    seg = {(i, j): int(row[f"seg{i}{j}"]) for i, j in _SEL_SEGS}
+    card = {}
+    for m in range(1, 32):
+        v = 1
+        for comp in _sel_components(m):
+            v *= seg[comp]
+        card[m] = v
+    cost = {1 << t: 0 for t in range(5)}
+    plan = {1 << t: _SEL_TABLES[t] for t in range(5)}
+    for size in range(2, 6):
+        for m in range(1, 32):
+            if bin(m).count("1") != size:
+                continue
+            best = None
+            for t in range(5):
+                if m >> t & 1:
+                    pm = m ^ (1 << t)
+                    cand = cost[pm] + card[m]
+                    if best is None or cand < best[0]:
+                        best = (cand, plan[pm] + ">" + _SEL_TABLES[t])
+            cost[m], plan[m] = best
+    import itertools
+    pc = []
+    for perm in itertools.permutations(range(5)):
+        msk, tot = 0, 0
+        for k, t in enumerate(perm):
+            msk |= 1 << t
+            if k >= 1:
+                tot += card[msk]
+        pc.append(tot)
+    brute_min, brute_max = min(pc), max(pc)
+    rows = []
+    for m in range(1, 32):
+        tbls = "".join(_SEL_TABLES[t] for t in range(5) if m >> t & 1)
+        rows.append((m, tbls, card[m],
+                     cost[m] if bin(m).count("1") > 1 else 0, plan[m],
+                     cost[31], brute_min, cost[31] == brute_min,
+                     brute_max, brute_max * 100 // cost[31]))
+    return spark.createDataFrame(
+        rows, "mask int, tables string, cardinality long,"
+              " best_cost long, best_plan string, full_best long,"
+              " brute_min long, dp_equals_brute boolean,"
+              " worst_perm long, worst_over_best_e2 long")
+
+
+_TA_SQL = """
+WITH sc AS (
+  SELECT user_id,
+         sum(CASE WHEN event_type = 'click'
+             THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
+             ELSE 0 END) AS s1,
+         sum(CASE WHEN event_type = 'purchase'
+             THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
+             ELSE 0 END) AS s2
+  FROM events GROUP BY user_id
+), rk AS (
+  SELECT user_id, s1, s2, s1 + s2 AS total,
+         row_number() OVER (ORDER BY s1 DESC, user_id) AS r1,
+         row_number() OVER (ORDER BY s2 DESC, user_id) AS r2
+  FROM sc
+), nn AS (
+  SELECT count(*) AS n, least(count(*), 200) AS dmax FROM rk
+), steps AS (
+  SELECT CAST(unnest(range(1, (SELECT dmax FROM nn) + 1)) AS BIGINT)
+    AS d
+), th AS (
+  SELECT s.d, a.user_id AS u1, a.s1 AS v1, b.user_id AS u2,
+         b.s2 AS v2, a.s1 + b.s2 AS threshold
+  FROM steps s
+  JOIN rk a ON a.r1 = s.d
+  JOIN rk b ON b.r2 = s.d
+), seen AS (
+  SELECT s.d, r.user_id, r.total,
+         row_number() OVER (PARTITION BY s.d
+                            ORDER BY r.total DESC, r.user_id) AS rn
+  FROM steps s JOIN rk r ON least(r.r1, r.r2) <= s.d
+), kb AS (
+  SELECT d, max(CASE WHEN rn = 5 THEN total END) AS kth
+  FROM seen GROUP BY d
+), st AS (
+  SELECT th.d, th.u1, th.v1, th.u2, th.v2, th.threshold, kb.kth,
+         kb.kth IS NOT NULL AND kb.kth >= th.threshold AS stopped
+  FROM th JOIN kb ON kb.d = th.d
+), stp AS (
+  SELECT coalesce(min(d) FILTER (WHERE stopped),
+                  (SELECT dmax FROM nn)) AS stop_d
+  FROM st
+), top5 AS (
+  SELECT string_agg(CAST(user_id AS VARCHAR) || ':'
+                    || CAST(total AS VARCHAR), ',' ORDER BY rn)
+    AS ta_top5
+  FROM seen
+  WHERE d = (SELECT stop_d FROM stp) AND rn <= 5
+), brute AS (
+  SELECT string_agg(CAST(user_id AS VARCHAR) || ':'
+                    || CAST(total AS VARCHAR), ',' ORDER BY rn) AS b5
+  FROM (SELECT user_id, total,
+               row_number() OVER (ORDER BY total DESC, user_id) AS rn
+        FROM rk)
+  WHERE rn <= 5
+)
+SELECT CAST(s.d AS INTEGER) AS d, s.u1, CAST(s.v1 AS BIGINT) AS v1,
+       s.u2, CAST(s.v2 AS BIGINT) AS v2,
+       CAST(s.threshold AS BIGINT) AS threshold,
+       CAST(s.kth AS BIGINT) AS kth_best, s.stopped,
+       CAST((SELECT stop_d FROM stp) AS INTEGER) AS stop_step,
+       CAST((SELECT n FROM nn) AS BIGINT) AS n_users,
+       (SELECT ta_top5 FROM top5) AS ta_top5,
+       (SELECT b5 FROM brute) AS brute_top5,
+       (SELECT ta_top5 FROM top5) = (SELECT b5 FROM brute)
+         AS ta_exact_ok,
+       (SELECT stop_d FROM stp) < (SELECT n FROM nn)
+         AS early_stop
+FROM st s WHERE s.d <= (SELECT stop_d FROM stp)
+"""
+
+
+@register("q_events_ta_topk", _TA_SQL)
+def q_events_ta_topk(spark, sf_dir):
+    """Fagin's Threshold Algorithm (the middleware top-k join: optimal
+    for aggregating ranked lists without scanning them) over two real
+    rankings — per-user click-value cents and purchase-value cents:
+    sorted access walks both lists in parallel, every seen user is
+    random-accessed for its other score, and the walk STOPS the first
+    depth d where the 5th-best complete score reaches the threshold
+    T(d) = L1[d] + L2[d] — at which point the theorem guarantees the
+    top-5 is exact, pinned here against an independent full-sort brute
+    force (ta_exact_ok) with the early-stop depth emitted beside the
+    corpus size (the instance-optimality TA exists for). The per-depth
+    state (threshold, kth-best-so-far) is computed SET-AT-A-TIME — a
+    steps x users join with one rank window per depth, no sequential
+    walk — exactly how a distributed engine would evaluate TA's stop
+    condition over partitioned rankings. Depth capped at 200 with an
+    honest full-scan fallback (stop_step = n) that keeps the pin
+    meaningful either way."""
+    e = _t(spark, sf_dir, "events")
+    cents = F.floor(F.col("value") * 100 + 0.5).cast("long")
+    sc = (e.groupBy("user_id")
+          .agg(F.sum(F.when(F.col("event_type") == "click", cents)
+                     .otherwise(0)).alias("s1"),
+               F.sum(F.when(F.col("event_type") == "purchase", cents)
+                     .otherwise(0)).alias("s2")))
+    rk = (sc.withColumn("total", F.col("s1") + F.col("s2"))
+          .withColumn("r1", F.row_number().over(
+              Window.orderBy(F.desc("s1"), "user_id")))
+          .withColumn("r2", F.row_number().over(
+              Window.orderBy(F.desc("s2"), "user_id")))).persist()
+    n = rk.count()
+    dmax = min(n, 200)
+    steps = spark.range(1, dmax + 1).select(F.col("id").alias("d"))
+    th = (steps.join(rk.select(F.col("r1").alias("d"),
+                               F.col("user_id").alias("u1"),
+                               F.col("s1").alias("v1")), "d")
+          .join(rk.select(F.col("r2").alias("d"),
+                          F.col("user_id").alias("u2"),
+                          F.col("s2").alias("v2")), "d")
+          .withColumn("threshold", F.col("v1") + F.col("v2")))
+    seen = (steps.join(rk, F.least("r1", "r2") <= F.col("d"))
+            .select("d", "user_id", "total")
+            .withColumn("rn", F.row_number().over(
+                Window.partitionBy("d")
+                .orderBy(F.desc("total"), "user_id"))))
+    kb = seen.groupBy("d").agg(
+        F.max(F.when(F.col("rn") == 5, F.col("total"))).alias("kth"))
+    st = (th.join(kb, "d")
+          .withColumn("stopped", F.col("kth").isNotNull()
+                      & (F.col("kth") >= F.col("threshold"))))
+    stop_d = (st.agg(F.coalesce(
+        F.min(F.when(F.col("stopped"), F.col("d"))),
+        F.lit(dmax)).alias("s")).collect()[0]["s"])
+    item = F.concat(F.col("user_id").cast("string"), F.lit(":"),
+                    F.col("total").cast("string"))
+    ta5 = (seen.filter((F.col("d") == stop_d) & (F.col("rn") <= 5))
+           .orderBy("rn").agg(F.concat_ws(",", F.collect_list(item))
+                              .alias("t")).collect()[0]["t"])
+    b5 = (rk.withColumn("rn", F.row_number().over(
+        Window.orderBy(F.desc("total"), "user_id")))
+        .filter(F.col("rn") <= 5).orderBy("rn")
+        .agg(F.concat_ws(",", F.collect_list(item)).alias("t"))
+        .collect()[0]["t"])
+    return (st.filter(F.col("d") <= stop_d)
+            .select(F.col("d").cast("int").alias("d"), "u1",
+                    F.col("v1").cast("long").alias("v1"), "u2",
+                    F.col("v2").cast("long").alias("v2"),
+                    F.col("threshold").cast("long").alias("threshold"),
+                    F.col("kth").cast("long").alias("kth_best"),
+                    "stopped",
+                    F.lit(int(stop_d)).cast("int").alias("stop_step"),
+                    F.lit(n).cast("long").alias("n_users"),
+                    F.lit(ta5).alias("ta_top5"),
+                    F.lit(b5).alias("brute_top5"),
+                    F.lit(ta5 == b5).alias("ta_exact_ok"),
+                    F.lit(bool(stop_d < n)).alias("early_stop")))
+
+
+_FM_PATTERNS = ["the", "ing", "data", "qu"]
+
+
+def _fm_sql() -> str:
+    # per-pattern backward-search chains as generated LATERALs; the
+    # pattern characters are compile-time constants, all interval
+    # arithmetic runs on the data-derived C/occ tables
+    pats = []
+    for p in _FM_PATTERNS:
+        chain = []
+        last = p[-1]
+        chain.append(
+            f"LATERAL (SELECT coalesce((SELECT c FROM ctab"
+            f" WHERE ch = '{last}'), 0) + 1 AS sp,"
+            f" coalesce((SELECT c FROM ctab WHERE ch = '{last}'), 0)"
+            f" + coalesce((SELECT cnt FROM freq WHERE ch = '{last}'),"
+            f" 0) AS ep) st1")
+        for k, c in enumerate(reversed(p[:-1]), start=2):
+            prev = f"st{k - 1}"
+            chain.append(
+                f"LATERAL (SELECT CASE WHEN {prev}.sp > {prev}.ep"
+                f" THEN {prev}.sp ELSE"
+                f" coalesce((SELECT c FROM ctab WHERE ch = '{c}'), 0)"
+                f" + (SELECT count(*) FROM ranked WHERE ch = '{c}'"
+                f" AND rank <= {prev}.sp - 1) + 1 END AS sp,"
+                f" CASE WHEN {prev}.sp > {prev}.ep THEN {prev}.ep ELSE"
+                f" coalesce((SELECT c FROM ctab WHERE ch = '{c}'), 0)"
+                f" + (SELECT count(*) FROM ranked WHERE ch = '{c}'"
+                f" AND rank <= {prev}.ep) END AS ep) st{k}")
+        steps_rows = []
+        for k in range(1, len(p) + 1):
+            c = p[len(p) - k]
+            steps_rows.append(
+                f"SELECT '{p}' AS pattern, {k} AS step, '{c}' AS ch,"
+                f" CAST(st{k}.sp AS BIGINT) AS sp,"
+                f" CAST(st{k}.ep AS BIGINT) AS ep,"
+                f" CAST(greatest(st{k}.ep - st{k}.sp + 1, 0) AS BIGINT)"
+                f" AS width,"
+                f" CAST(greatest(st{len(p)}.ep - st{len(p)}.sp + 1, 0)"
+                f" AS BIGINT) AS fm_count,"
+                f" CAST((length((SELECT s FROM d))"
+                f" - length(replace((SELECT s FROM d), '{p}', '')))"
+                f" // {len(p)} AS BIGINT) AS direct_count"
+                f" FROM {' , '.join(['(SELECT 1) one'] + chain)}")
+        pats.append(" UNION ALL ".join(steps_rows))
+    body = " UNION ALL ".join(pats)
+    return f"""
+WITH d AS (
+  SELECT regexp_replace(lower(substr(text, 1, 200)), '[^a-z ]', '', 'g')
+         || '!' AS s
+  FROM documents ORDER BY doc_id LIMIT 1
+), idx AS (
+  SELECT unnest(range(1, length((SELECT s FROM d)) + 1)) AS i
+), rot AS (
+  SELECT CAST(i AS INTEGER) AS start_idx,
+         substr(d.s, CAST(i AS INTEGER))
+           || substr(d.s, 1, CAST(i AS INTEGER) - 1) AS r,
+         d.s AS s
+  FROM idx, d
+), ranked AS (
+  SELECT CAST(row_number() OVER (ORDER BY r) AS INTEGER) AS rank,
+         substr(r, length(s), 1) AS ch
+  FROM rot
+), freq AS (
+  SELECT ch, count(*) AS cnt FROM ranked GROUP BY ch
+), ctab AS (
+  SELECT f.ch, coalesce(sum(g.cnt), 0) AS c
+  FROM freq f LEFT JOIN freq g ON g.ch < f.ch
+  GROUP BY f.ch
+), res AS ({body})
+SELECT pattern, CAST(step AS INTEGER) AS step, ch, sp, ep, width,
+       fm_count, direct_count, fm_count = direct_count AS fm_exact_ok
+FROM res
+"""
+
+
+@register("text_fm_index_search", _fm_sql())
+def text_fm_index_search(spark, sf_dir):
+    """FM-index backward search (Ferragina-Manzini — the compressed
+    substring index inside bwa/bowtie) over the same 200-char
+    normalized document prefix as text_bwt_runs: BWT from sorted
+    rotations, C table from the character histogram, and each pattern
+    matched RIGHT to LEFT by the classic interval recurrence sp' =
+    C[c] + Occ(c, sp−1) + 1, ep' = C[c] + Occ(c, ep) — every step of
+    every interval emitted (sp, ep, width per consumed character), and
+    the final interval width pinned equal to a direct substring count
+    computed by length arithmetic in both engines (the four probe
+    patterns are chosen border-free so overlapping and non-overlapping
+    counts coincide and the replace-based direct count is exact).
+    Empty intervals propagate honestly (width 0 stays 0). The trio
+    text_bwt_runs / text_bwt_inverse / this row now covers build,
+    invert and SEARCH on the same transform. Engine: bounded driver
+    replay over the same rotations; oracle: generated per-pattern
+    LATERAL chains with correlated Occ subqueries against the ranked
+    rotation table."""
+    import re as _re
+    txt = (_t(spark, sf_dir, "documents").orderBy("doc_id")
+           .limit(1).collect()[0]["text"])
+    s = _re.sub(r"[^a-z ]", "", txt[:200].lower()) + "!"
+    n = len(s)
+    rots = sorted(s[i:] + s[:i] for i in range(n))
+    bwt = [r[-1] for r in rots]
+    freq: dict = {}
+    for c in s:
+        freq[c] = freq.get(c, 0) + 1
+    ctab = {c: sum(v for k, v in freq.items() if k < c) for c in freq}
+
+    def occ(c, i):
+        return sum(1 for x in bwt[:i] if x == c)
+
+    rows = []
+    for p in _FM_PATTERNS:
+        direct = (len(s) - len(s.replace(p, ""))) // len(p)
+        c = p[-1]
+        sp = ctab.get(c, 0) + 1
+        ep = ctab.get(c, 0) + freq.get(c, 0)
+        steps = [(1, c, sp, ep)]
+        for k, c in enumerate(reversed(p[:-1]), start=2):
+            if sp > ep:
+                steps.append((k, c, sp, ep))
+                continue
+            sp2 = ctab.get(c, 0) + occ(c, sp - 1) + 1
+            ep2 = ctab.get(c, 0) + occ(c, ep)
+            sp, ep = sp2, ep2
+            steps.append((k, c, sp, ep))
+        fm = max(ep - sp + 1, 0)
+        for k, c, a, b in steps:
+            rows.append((p, k, c, a, b, max(b - a + 1, 0), fm, direct,
+                         fm == direct))
+    return spark.createDataFrame(
+        rows, "pattern string, step int, ch string, sp long, ep long,"
+              " width long, fm_count long, direct_count long,"
+              " fm_exact_ok boolean")
+
+
+_WAVELET_SQL = """
+WITH words AS (
+  SELECT doc_id, wp, word
+  FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS word,
+               generate_subscripts(string_split(text, ' '), 1) AS wp
+        FROM documents)
+  WHERE word <> ''
+), seq0 AS (
+  SELECT word, row_number() OVER (ORDER BY doc_id, wp) AS pos
+  FROM words
+), seq AS (
+  SELECT word, pos FROM seq0 WHERE pos <= 512
+), vocab AS (
+  SELECT word, row_number() OVER (ORDER BY word) - 1 AS wid
+  FROM (SELECT DISTINCT word FROM seq)
+), s AS (
+  SELECT q.pos, q.word, v.wid
+  FROM seq q JOIN vocab v ON v.word = q.word
+), nn AS (
+  SELECT count(*) AS n FROM s
+), lv AS (
+  SELECT l.l, s.pos, s.wid,
+         s.wid // CAST(power(2, 5 - l.l) AS BIGINT) AS node,
+         (s.wid // CAST(power(2, 4 - l.l) AS BIGINT)) % 2 AS bit,
+         row_number() OVER (PARTITION BY l.l,
+             s.wid // CAST(power(2, 5 - l.l) AS BIGINT)
+             ORDER BY s.pos) AS npos
+  FROM s, (SELECT unnest(range(0, 5)) AS l) l
+), freq AS (
+  SELECT s.wid, s.word, count(*) AS cnt
+  FROM s GROUP BY s.wid, s.word
+), pw AS (
+  SELECT word, wid, rf FROM (
+    SELECT word, wid, row_number() OVER (ORDER BY cnt DESC, word)
+      AS rf
+    FROM freq)
+  WHERE rf IN (1, 3, 7, 15)
+), probes AS (
+  SELECT p.word, p.wid, i.i
+  FROM pw p, LATERAL (
+    SELECT (SELECT n FROM nn) // 4 AS i
+    UNION ALL SELECT (SELECT n FROM nn) // 2) i
+), de AS (
+  SELECT pr.word, pr.wid, pr.i,
+         d0.c AS i1, d1.c AS i2, d2.c AS i3, d3.c AS i4, d4.c AS i5
+  FROM probes pr
+  CROSS JOIN LATERAL (
+    SELECT (SELECT count(*) FROM lv WHERE lv.l = 0
+            AND lv.node = pr.wid // 32
+            AND lv.npos <= pr.i
+            AND lv.bit = (pr.wid // 16) % 2) AS c) d0
+  CROSS JOIN LATERAL (
+    SELECT (SELECT count(*) FROM lv WHERE lv.l = 1
+            AND lv.node = pr.wid // 16
+            AND lv.npos <= d0.c
+            AND lv.bit = (pr.wid // 8) % 2) AS c) d1
+  CROSS JOIN LATERAL (
+    SELECT (SELECT count(*) FROM lv WHERE lv.l = 2
+            AND lv.node = pr.wid // 8
+            AND lv.npos <= d1.c
+            AND lv.bit = (pr.wid // 4) % 2) AS c) d2
+  CROSS JOIN LATERAL (
+    SELECT (SELECT count(*) FROM lv WHERE lv.l = 3
+            AND lv.node = pr.wid // 4
+            AND lv.npos <= d2.c
+            AND lv.bit = (pr.wid // 2) % 2) AS c) d3
+  CROSS JOIN LATERAL (
+    SELECT (SELECT count(*) FROM lv WHERE lv.l = 4
+            AND lv.node = pr.wid // 2
+            AND lv.npos <= d3.c
+            AND lv.bit = pr.wid % 2) AS c) d4
+)
+SELECT d.word, CAST(d.wid AS INTEGER) AS wid, CAST(d.i AS BIGINT) AS i,
+       CAST(d.i1 AS BIGINT) AS l1_rank, CAST(d.i2 AS BIGINT) AS l2_rank,
+       CAST(d.i3 AS BIGINT) AS l3_rank, CAST(d.i4 AS BIGINT) AS l4_rank,
+       CAST(d.i5 AS BIGINT) AS wavelet_rank,
+       CAST((SELECT count(*) FROM s
+             WHERE s.word = d.word AND s.pos <= d.i) AS BIGINT)
+         AS direct_rank,
+       d.i5 = (SELECT count(*) FROM s
+               WHERE s.word = d.word AND s.pos <= d.i) AS rank_ok,
+       CAST((SELECT n FROM nn) AS BIGINT) AS n,
+       CAST((SELECT count(*) FROM vocab) AS INTEGER) AS vocab_size
+FROM de d
+"""
+
+
+@register("text_wavelet_tree_rank", _WAVELET_SQL)
+def text_wavelet_tree_rank(spark, sf_dir):
+    """Wavelet tree rank queries (Grossi-Gupta-Vitter — the succinct
+    sequence index behind FM-index Occ tables and compressed column
+    stores) over the corpus's first 512 words mapped to 5-bit
+    alphabetical ids: the tree needs NO iterative construction because
+    stable bit-partitioning preserves original order inside every node,
+    so each depth's (node, position, bit) table is a closed form — one
+    row_number window per depth over the id's high bits. rank(word, i)
+    then descends the five levels with the classic recurrence iₗ₊₁ =
+    rank_bit(node, iₗ), every intermediate interval position emitted,
+    and the result pinned against a direct windowed count on the raw
+    sequence — for eight probes spanning frequent and rare words at two
+    depths. The level tables are the distributed part (pure windows by
+    (depth, node), the per-partition shape of a column-store index
+    build); each probe's descent is five O(1) lookups. Completes the
+    succinct-structure family beside Elias-Fano and the BWT trio.
+    Engine: bounded driver replay over the same 512-word sequence;
+    oracle: correlated-count descent through chained LATERALs."""
+    rows = (_t(spark, sf_dir, "documents")
+            .select("doc_id", F.posexplode(F.split("text", " "))
+                    .alias("wp", "word"))
+            .filter(F.col("word") != "")
+            .select("doc_id", "wp", "word")
+            .orderBy("doc_id", "wp").limit(512).collect())
+    seqw = [r["word"] for r in rows]
+    n = len(seqw)
+    vocab = {w: i for i, w in enumerate(sorted(set(seqw)))}
+    from collections import Counter
+    cnt = Counter(seqw)
+    ranked = sorted(cnt.items(), key=lambda kv: (-kv[1], kv[0]))
+    picks = [ranked[j][0] for j in (0, 2, 6, 14) if j < len(ranked)]
+    out = []
+    for w in picks:
+        wid = vocab[w]
+        for i in (n // 4, n // 2):
+            ip = i
+            inter = []
+            for l in range(5):
+                node = wid >> (5 - l)
+                bit = (wid >> (4 - l)) & 1
+                node_elems = [x for x in seqw
+                              if vocab[x] >> (5 - l) == node]
+                ip = sum(1 for x in node_elems[:ip]
+                         if (vocab[x] >> (4 - l)) & 1 == bit)
+                inter.append(ip)
+            direct = sum(1 for x in seqw[:i] if x == w)
+            out.append((w, wid, i, inter[0], inter[1], inter[2],
+                        inter[3], inter[4], direct,
+                        inter[4] == direct, n, len(vocab)))
+    return spark.createDataFrame(
+        out, "word string, wid int, i long, l1_rank long, l2_rank long,"
+             " l3_rank long, l4_rank long, wavelet_rank long,"
+             " direct_rank long, rank_ok boolean, n long,"
+             " vocab_size int")
+
+
+_LEARNED_IDX_SQL = """
+WITH ks AS (
+  SELECT doc_id,
+         CAST(concat('0x', substr(md5('li:' || CAST(doc_id AS VARCHAR)),
+                                  1, 12)) AS BIGINT) AS key
+  FROM documents
+), rk AS (
+  SELECT doc_id, key,
+         row_number() OVER (ORDER BY key, doc_id) - 1 AS pos
+  FROM ks
+), seg AS (
+  SELECT rk.*, key // 35184372088832 AS sg   -- top 3 bits of 48
+  FROM rk
+), sb AS (
+  SELECT sg, min(pos) AS base, count(*) AS n_seg,
+         min(key) AS lo, max(key) AS hi
+  FROM seg GROUP BY sg
+), pred AS (
+  SELECT s.sg, s.doc_id, s.key, s.pos, b.base, b.n_seg, b.lo, b.hi,
+         b.base + CASE WHEN b.hi = b.lo THEN 0
+           ELSE (s.key - b.lo) * (b.n_seg - 1) // (b.hi - b.lo) END
+           AS ppos
+  FROM seg s JOIN sb b ON b.sg = s.sg
+), err AS (
+  SELECT sg, max(abs(pos - ppos)) AS maxerr,
+         sum(abs(pos - ppos)) AS toterr, count(*) AS n_seg
+  FROM pred GROUP BY sg
+), chk AS (
+  SELECT p.sg,
+         bool_and(p.pos BETWEEN p.ppos - e.maxerr
+                  AND p.ppos + e.maxerr) AS all_covered
+  FROM pred p JOIN err e ON e.sg = p.sg
+  GROUP BY p.sg
+), tot AS (
+  SELECT count(*) AS n, max(pos) AS maxpos FROM rk
+)
+SELECT CAST(e.sg AS INTEGER) AS segment,
+       CAST(e.n_seg AS BIGINT) AS n_keys,
+       CAST(b.lo AS BIGINT) AS key_lo, CAST(b.hi AS BIGINT) AS key_hi,
+       CAST(b.base AS BIGINT) AS pos_base,
+       CAST(e.maxerr AS BIGINT) AS max_err,
+       CAST(e.toterr * 1000000 // e.n_seg AS BIGINT) AS mean_err_e6,
+       c.all_covered,
+       CAST(length(bin(GREATEST(2 * e.maxerr + 1, 1))) AS INTEGER)
+         AS search_bits,
+       CAST(length(bin(GREATEST((SELECT n FROM tot), 1))) AS INTEGER)
+         AS full_bits,
+       length(bin(GREATEST(2 * e.maxerr + 1, 1)))
+         <= length(bin(GREATEST((SELECT n FROM tot), 1)))
+         AS never_worse,
+       CAST((SELECT n FROM tot) AS BIGINT) AS n_total
+FROM err e JOIN sb b ON b.sg = e.sg JOIN chk c ON c.sg = e.sg
+"""
+
+
+@register("q_docs_learned_index", _LEARNED_IDX_SQL)
+def q_docs_learned_index(spark, sf_dir):
+    """Learned index in the RadixSpline/PLEX style (the CDF-model
+    alternative to B+-trees): 48-bit md5-spread keys per document,
+    partitioned into 8 radix segments by their top 3 bits, each segment
+    modeled by the exact integer CDF line pos ≈ base + (key−lo)·(n−1)
+    div (hi−lo) — no floats anywhere — with the per-segment MAXIMUM
+    prediction error measured against true ranks and the lookup
+    contract pinned: every key's true position lies within
+    [pred−maxerr, pred+maxerr] (all_covered), so a lookup binary-
+    searches log2(2·maxerr+1) positions instead of log2(n) — both bit
+    counts emitted with never_worse pinned, the exact win a learned
+    index is built for (near-uniform keys give single-digit errors
+    where the B+-tree row pays its full height). Ranks, segment stats
+    and error maxima are one window plus two aggregates — fully
+    distributed, the same shape at 10⁹ keys. The B+-tree bulk-load row
+    over the same table is the classical baseline this replaces."""
+    ks = (_t(spark, sf_dir, "documents")
+          .select("doc_id", F.conv(F.substring(F.md5(F.concat(
+              F.lit("li:"), F.col("doc_id").cast("string"))), 1, 12),
+              16, 10).cast("long").alias("key")))
+    rk = ks.withColumn("pos", F.row_number().over(
+        Window.orderBy("key", "doc_id")) - 1)
+    seg = rk.withColumn("sg", F.expr("key div 35184372088832"))
+    sb = seg.groupBy("sg").agg(F.min("pos").alias("base"),
+                               F.count(F.lit(1)).alias("n_seg"),
+                               F.min("key").alias("lo"),
+                               F.max("key").alias("hi"))
+    pred = (seg.join(sb, "sg")
+            .withColumn("ppos", F.col("base") + F.when(
+                F.col("hi") == F.col("lo"), 0).otherwise(
+                F.expr("(key - lo) * (n_seg - 1) div (hi - lo)"))))
+    err = pred.groupBy("sg").agg(
+        F.max(F.abs(F.col("pos") - F.col("ppos"))).alias("maxerr"),
+        F.sum(F.abs(F.col("pos") - F.col("ppos"))).alias("toterr"),
+        F.count(F.lit(1)).alias("n_seg2"))
+    chk = (pred.join(err, "sg")
+           .groupBy("sg")
+           .agg(F.min((F.col("pos") >= F.col("ppos") - F.col("maxerr"))
+                      & (F.col("pos") <= F.col("ppos")
+                         + F.col("maxerr"))).alias("all_covered")))
+    tot = rk.agg(F.count(F.lit(1)).alias("n"))
+    bits = lambda c: F.length(F.bin(F.greatest(c, F.lit(1))))  # noqa: E731
+    return (err.join(sb, "sg").join(chk, "sg")
+            .crossJoin(F.broadcast(tot))
+            .select(F.col("sg").cast("int").alias("segment"),
+                    F.col("n_seg2").cast("long").alias("n_keys"),
+                    F.col("lo").cast("long").alias("key_lo"),
+                    F.col("hi").cast("long").alias("key_hi"),
+                    F.col("base").cast("long").alias("pos_base"),
+                    F.col("maxerr").cast("long").alias("max_err"),
+                    F.expr("toterr * 1000000 div n_seg2").cast("long")
+                    .alias("mean_err_e6"),
+                    "all_covered",
+                    bits(2 * F.col("maxerr") + 1).cast("int")
+                    .alias("search_bits"),
+                    bits(F.col("n")).cast("int").alias("full_bits"),
+                    (bits(2 * F.col("maxerr") + 1) <= bits(F.col("n")))
+                    .alias("never_worse"),
+                    F.col("n").cast("long").alias("n_total")))
+
+
+_APRIORI_SQL = """
+WITH um AS (
+  SELECT user_id,
+         max(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
+         + max(CASE WHEN event_type = 'error' THEN 2 ELSE 0 END)
+         + max(CASE WHEN event_type = 'purchase' THEN 4 ELSE 0 END)
+         + max(CASE WHEN event_type = 'signup' THEN 8 ELSE 0 END)
+         + max(CASE WHEN event_type = 'view' THEN 16 ELSE 0 END)
+           AS mask
+  FROM events GROUP BY user_id
+), nn AS (
+  SELECT count(*) AS n FROM um
+), its AS (
+  SELECT CAST(s AS BIGINT) AS iset
+  FROM (SELECT unnest(range(1, 32)) AS s)
+), sup AS (
+  SELECT i.iset,
+         (SELECT count(*) FROM um
+          WHERE (um.mask & i.iset) = i.iset) AS support
+  FROM its i
+), base AS (
+  SELECT s.iset, s.support,
+         bit_count(CAST(s.iset AS BIGINT)) AS k,
+         s.support * 10 >= (SELECT n FROM nn) AS frequent
+  FROM sup s
+), am AS (
+  SELECT b.iset,
+         bool_and(p.support >= b.support) AS antimonotone_ok
+  FROM base b
+  JOIN base p ON b.k > 1 AND p.k = b.k - 1
+             AND (b.iset & p.iset) = p.iset
+  GROUP BY b.iset
+), maxi AS (
+  SELECT b.iset,
+         b.frequent AND NOT EXISTS (
+           SELECT 1 FROM base sup2
+           WHERE sup2.k = b.k + 1 AND (sup2.iset & b.iset) = b.iset
+             AND sup2.frequent) AS is_maximal
+  FROM base b
+)
+SELECT CAST(b.iset AS INTEGER) AS iset,
+       concat(CASE WHEN b.iset & 1 > 0 THEN 'C' ELSE '' END,
+              CASE WHEN b.iset & 2 > 0 THEN 'E' ELSE '' END,
+              CASE WHEN b.iset & 4 > 0 THEN 'P' ELSE '' END,
+              CASE WHEN b.iset & 8 > 0 THEN 'S' ELSE '' END,
+              CASE WHEN b.iset & 16 > 0 THEN 'V' ELSE '' END)
+         AS items,
+       CAST(b.k AS INTEGER) AS k, CAST(b.support AS BIGINT) AS support,
+       b.frequent, coalesce(a.antimonotone_ok, TRUE) AS antimonotone_ok,
+       m.is_maximal,
+       CAST((SELECT n FROM nn) AS BIGINT) AS n_users
+FROM base b
+LEFT JOIN am a ON a.iset = b.iset
+JOIN maxi m ON m.iset = b.iset
+"""
+
+
+@register("q_events_apriori_itemsets", _APRIORI_SQL)
+def q_events_apriori_itemsets(spark, sf_dir):
+    """Apriori frequent itemsets over each user's SET of event types,
+    evaluated exactly by bitmask algebra — a user's behavior profile is
+    one 5-bit mask, itemset support is a superset test (mask & S = S),
+    and all 31 candidate itemsets are scored in one pass against the
+    per-user mask table. The property the Apriori algorithm EXISTS for
+    is pinned on every itemset: antimonotonicity — support(S) never
+    exceeds the support of any (k−1)-subset, verified by a real
+    subset join — plus the maximal-frequent frontier (frequent with no
+    frequent superset, the condensed output a miner would report) at a
+    10% support threshold. The per-user mask aggregate is the only
+    data-sized stage (map-side combinable); the 31-itemset lattice is
+    planner-scale. No replay, no recursion, either engine."""
+    e = _t(spark, sf_dir, "events")
+    bit = {"click": 1, "error": 2, "purchase": 4, "signup": 8,
+           "view": 16}
+    aggs = [F.max(F.when(F.col("event_type") == t, b).otherwise(0))
+            .alias(f"b{b}") for t, b in bit.items()]
+    um = (e.groupBy("user_id").agg(*aggs)
+          .select((sum(F.col(f"b{b}") for b in bit.values()))
+                  .alias("mask")))
+    n = um.count()
+    its = spark.range(1, 32).select(F.col("id").alias("iset"))
+    sup = (its.crossJoin(um)
+           .groupBy("iset")
+           .agg(F.sum(F.when(
+               F.expr("(mask & iset) = iset"), 1).otherwise(0))
+               .alias("support")))
+    base = (sup.withColumn("k", F.bit_count("iset").cast("int"))
+            .withColumn("frequent", F.col("support") * 10 >= F.lit(n))
+            ).persist()
+    b2 = base.select(F.col("iset").alias("piset"),
+                     F.col("support").alias("psupport"),
+                     F.col("k").alias("pk"),
+                     F.col("frequent").alias("pfrequent"))
+    anti = (base.join(b2, F.expr(
+        "k > 1 AND pk = k - 1 AND (iset & piset) = piset"))
+        .groupBy("iset")
+        .agg(F.min(F.col("psupport") >= F.col("support"))
+             .alias("antimonotone_ok")))
+    maxi = (base.join(b2, F.expr(
+        "pk = k + 1 AND (piset & iset) = iset AND pfrequent"), "left")
+        .groupBy("iset")
+        .agg((F.first("frequent")
+              & (F.count(F.col("piset")) == 0)).alias("is_maximal")))
+    items = F.concat(
+        F.when(F.expr("iset & 1 > 0"), "C").otherwise(""),
+        F.when(F.expr("iset & 2 > 0"), "E").otherwise(""),
+        F.when(F.expr("iset & 4 > 0"), "P").otherwise(""),
+        F.when(F.expr("iset & 8 > 0"), "S").otherwise(""),
+        F.when(F.expr("iset & 16 > 0"), "V").otherwise(""))
+    return (base.join(anti, "iset", "left").join(maxi, "iset")
+            .select(F.col("iset").cast("int").alias("iset"),
+                    items.alias("items"),
+                    F.col("k").cast("int").alias("k"),
+                    F.col("support").cast("long").alias("support"),
+                    "frequent",
+                    F.coalesce("antimonotone_ok", F.lit(True))
+                    .alias("antimonotone_ok"),
+                    "is_maximal",
+                    F.lit(n).cast("long").alias("n_users")))
+
+
+_GOLOMB_SQL = """
+WITH pid AS (
+  SELECT event_id AS x,
+         row_number() OVER (ORDER BY event_id) AS rn
+  FROM events WHERE event_type = 'purchase'
+), gaps AS (
+  SELECT p.rn, p.x,
+         p.x - coalesce(lag(p.x) OVER (ORDER BY p.x), -1) AS g
+  FROM pid p
+), stats AS (
+  SELECT count(*) AS n, sum(g) AS totg, max(g) AS maxg FROM gaps
+), scan AS (
+  SELECT b.b,
+         (SELECT sum(((g.g - 1) // (CAST(1 AS BIGINT) << b.b)) + 1
+                     + b.b) FROM gaps g) AS bits
+  FROM (SELECT unnest(range(0, 17)) AS b) b
+), best AS (
+  SELECT b AS bstar, bits AS best_bits
+  FROM scan ORDER BY bits, b LIMIT 1
+), heur AS (
+  SELECT greatest(length(bin(GREATEST(
+           (SELECT totg FROM stats) * 693
+           // ((SELECT n FROM stats) * 1000), 1))) - 1, 0) AS bh
+), hbits AS (
+  SELECT (SELECT sum(((g.g - 1) // (CAST(1 AS BIGINT)
+             << (SELECT bh FROM heur))) + 1 + (SELECT bh FROM heur))
+          FROM gaps g) AS heur_bits
+), plain AS (
+  SELECT (SELECT n FROM stats)
+         * length(bin(GREATEST((SELECT maxg FROM stats), 1)))
+           AS plain_bits
+)
+SELECT CAST(s.b AS INTEGER) AS b, CAST(s.bits AS BIGINT) AS total_bits,
+       CAST((SELECT bstar FROM best) AS INTEGER) AS b_star,
+       CAST((SELECT best_bits FROM best) AS BIGINT) AS best_bits,
+       s.bits >= (SELECT best_bits FROM best) AS bstar_optimal_ok,
+       CAST((SELECT bh FROM heur) AS INTEGER) AS b_heuristic,
+       CAST((SELECT heur_bits FROM hbits) AS BIGINT) AS heuristic_bits,
+       (SELECT best_bits FROM best) <= (SELECT heur_bits FROM hbits)
+         AS best_le_heuristic,
+       CAST((SELECT plain_bits FROM plain) AS BIGINT) AS plain_bits,
+       (SELECT best_bits FROM best) < (SELECT plain_bits FROM plain)
+         AS beats_plain,
+       CAST((SELECT n FROM stats) AS BIGINT) AS n_gaps
+FROM scan s
+"""
+
+
+@register("search_golomb_gaps", _GOLOMB_SQL)
+def search_golomb_gaps(spark, sf_dir):
+    """Golomb-Rice coding of the purchase posting list's gaps — the
+    inverted-index gap compression that preceded Elias-Fano (and still
+    backs Lucene doc deltas): for every Rice parameter b in 0..16 the
+    exact encoded size Σ((g−1)>>b + 1 + b) is computed in ONE
+    conditional-aggregate scan (no per-b passes over data — the scan
+    is a 17-row broadcast against the gap table), the optimal b* is
+    the argmin with every row pinned ≥ best (bstar_optimal_ok), the
+    classic heuristic b ≈ log2(0.69·mean_gap) — integer bit-length
+    math, no logs — rides beside it pinned never better than the
+    exhaustive optimum, and the whole code is pinned smaller than
+    fixed-width max-gap encoding. Gaps come from one lag window over
+    the filtered postings; everything else is aggregate arithmetic —
+    the per-term shape of an index compressor at any scale."""
+    e = _t(spark, sf_dir, "events")
+    pid = (e.filter(F.col("event_type") == "purchase")
+           .select(F.col("event_id").alias("x")))
+    gaps = pid.select(
+        (F.col("x") - F.coalesce(
+            F.lag("x").over(Window.orderBy("x")), F.lit(-1)))
+        .alias("g")).persist()
+    st = gaps.agg(F.count(F.lit(1)).alias("n"),
+                  F.sum("g").alias("totg"),
+                  F.max("g").alias("maxg")).collect()[0]
+    n, totg, maxg = int(st["n"]), int(st["totg"]), int(st["maxg"])
+    bs = spark.range(0, 17).select(F.col("id").cast("int").alias("b"))
+    scan = (bs.crossJoin(gaps)
+            .groupBy("b")
+            .agg(F.sum(F.expr(
+                "((g - 1) div shiftleft(CAST(1 AS BIGINT), b)) + 1 + b"))
+                .alias("bits")))
+    rows = {int(r["b"]): int(r["bits"]) for r in scan.collect()}
+    bstar = min(rows, key=lambda b: (rows[b], b))
+    bh = max((totg * 693 // (n * 1000)).bit_length() - 1, 0)
+    heur_bits = rows[bh]
+    plain_bits = n * max(maxg.bit_length(), 1)
+    out = [(b, bits, bstar, rows[bstar], bits >= rows[bstar], bh,
+            heur_bits, rows[bstar] <= heur_bits, plain_bits,
+            rows[bstar] < plain_bits, n)
+           for b, bits in sorted(rows.items())]
+    return spark.createDataFrame(
+        out, "b int, total_bits long, b_star int, best_bits long,"
+             " bstar_optimal_ok boolean, b_heuristic int,"
+             " heuristic_bits long, best_le_heuristic boolean,"
+             " plain_bits long, beats_plain boolean, n_gaps long")
+
+
+_TREAP_SQL = """
+WITH ks AS (
+  SELECT doc_id AS key,
+         CAST(concat('0x', substr(md5('tp:' || CAST(doc_id AS VARCHAR)),
+                                  1, 15)) AS BIGINT) AS prio
+  FROM documents WHERE doc_id < 512
+), nsl AS (
+  SELECT a.key, a.prio,
+         max(b.key) AS lkey
+  FROM ks a LEFT JOIN ks b ON b.key < a.key AND b.prio < a.prio
+  GROUP BY a.key, a.prio
+), nsr AS (
+  SELECT a.key, min(b.key) AS rkey
+  FROM ks a LEFT JOIN ks b ON b.key > a.key AND b.prio < a.prio
+  GROUP BY a.key
+), par AS (
+  SELECT l.key, l.prio, l.lkey, r.rkey,
+         CASE
+           WHEN l.lkey IS NULL AND r.rkey IS NULL THEN NULL
+           WHEN l.lkey IS NULL THEN r.rkey
+           WHEN r.rkey IS NULL THEN l.lkey
+           WHEN (SELECT prio FROM ks WHERE key = l.lkey)
+                > (SELECT prio FROM ks WHERE key = r.rkey)
+             THEN l.lkey
+           ELSE r.rkey END AS parent_key
+  FROM nsl l JOIN nsr r ON r.key = l.key
+), sided AS (
+  SELECT p.key, p.prio, p.parent_key,
+         CASE WHEN p.parent_key IS NULL THEN 'root'
+              WHEN p.key < p.parent_key THEN 'L' ELSE 'R' END AS side,
+         (SELECT prio FROM ks WHERE key = p.parent_key) AS pprio
+  FROM par p
+)
+SELECT s.key, s.prio, coalesce(s.parent_key, -1) AS parent_key, s.side,
+       s.parent_key IS NULL OR s.pprio < s.prio AS heap_ok,
+       s.parent_key IS NULL
+         OR (s.side = 'L' AND s.key < s.parent_key)
+         OR (s.side = 'R' AND s.key > s.parent_key) AS bst_ok,
+       CAST(count(*) OVER (PARTITION BY s.parent_key, s.side)
+            AS INTEGER) AS siblings,
+       s.parent_key IS NULL
+         OR count(*) OVER (PARTITION BY s.parent_key, s.side) = 1
+         AS unique_child_ok,
+       CAST(sum(CASE WHEN s.parent_key IS NULL THEN 1 ELSE 0 END)
+            OVER () AS INTEGER) AS n_roots
+FROM sided s
+"""
+
+
+@register("q_docs_treap_shape", _TREAP_SQL)
+def q_docs_treap_shape(spark, sf_dir):
+    """Treap / Cartesian tree over the document keys with md5
+    priorities — the randomized-BST canonical-form theorem made
+    machine-checkable: the ENGINE builds the treap by literal BST
+    insertion with rotations (bubble a node up while its priority
+    beats its parent's), the ORACLE builds it with zero insertions via
+    the Cartesian-tree closed form (a node's parent is whichever of
+    its two nearest-smaller-priority neighbors — by key, found with
+    two order joins — has the LARGER priority), and the correctness
+    gate's value-hash equality proves the two constructions coincide,
+    i.e. the treap's shape depends only on the (key, priority) set,
+    never on insertion order. Heap order, BST sidedness, one-child-
+    per-(parent,side) and single-root are additionally pinned per
+    node. The closed form is join+group work (no sequential pass) —
+    the canonical example of turning a pointer-machine build into a
+    set-at-a-time computation."""
+    import hashlib as _h
+    ids = sorted(r["doc_id"] for r in
+                 _t(spark, sf_dir, "documents")
+                 .filter(F.col("doc_id") < 512)
+                 .select("doc_id").collect())
+    prio = {k: int(_h.md5(f"tp:{k}".encode()).hexdigest()[:15], 16)
+            for k in ids}
+
+    class _N:
+        __slots__ = ("k", "l", "r", "p")
+
+        def __init__(self, k):
+            self.k, self.l, self.r, self.p = k, None, None, None
+
+    root = None
+
+    def rot(n):
+        p = n.p
+        g = p.p
+        if p.l is n:
+            p.l, n.r, = n.r, p
+            if p.l:
+                p.l.p = p
+        else:
+            p.r, n.l = n.l, p
+            if p.r:
+                p.r.p = p
+        n.p, p.p = g, n
+        if g:
+            if g.l is p:
+                g.l = n
+            else:
+                g.r = n
+        return n
+
+    for k in ids:
+        node = _N(k)
+        if root is None:
+            root = node
+            continue
+        cur = root
+        while True:
+            if k < cur.k:
+                if cur.l is None:
+                    cur.l = node
+                    node.p = cur
+                    break
+                cur = cur.l
+            else:
+                if cur.r is None:
+                    cur.r = node
+                    node.p = cur
+                    break
+                cur = cur.r
+        while node.p is not None and prio[node.k] < prio[node.p.k]:
+            node = rot(node)
+        if node.p is None:
+            root = node
+    out = []
+    stack = [root]
+    nodes = []
+    while stack:
+        n = stack.pop()
+        nodes.append(n)
+        if n.l:
+            stack.append(n.l)
+        if n.r:
+            stack.append(n.r)
+    for n in sorted(nodes, key=lambda x: x.k):
+        pk = n.p.k if n.p else -1
+        side = "root" if n.p is None else ("L" if n.p.l is n else "R")
+        heap_ok = n.p is None or prio[n.p.k] < prio[n.k]
+        bst_ok = n.p is None or (side == "L" and n.k < pk) \
+            or (side == "R" and n.k > pk)
+        out.append((n.k, prio[n.k], pk, side, heap_ok, bst_ok))
+    from collections import Counter
+    sib = Counter((pk, sd) for _, _, pk, sd, _, _ in out if pk != -1)
+    nroots = sum(1 for r in out if r[2] == -1)
+    rows = [(k, p, pk, sd, h, b,
+             1 if pk == -1 else sib[(pk, sd)],
+             pk == -1 or sib[(pk, sd)] == 1, nroots)
+            for k, p, pk, sd, h, b in out]
+    return spark.createDataFrame(
+        rows, "key long, prio long, parent_key long, side string,"
+              " heap_ok boolean, bst_ok boolean, siblings int,"
+              " unique_child_ok boolean, n_roots int")
+
+
+_TWOSAT_SQL = """
+WITH RECURSIVE vocab AS (
+  SELECT word, row_number() OVER (ORDER BY cnt DESC, word) - 1 AS v
+  FROM (SELECT word, count(*) AS cnt
+        FROM (SELECT unnest(string_split(text, ' ')) AS word
+              FROM documents)
+        WHERE word <> '' GROUP BY word)
+  QUALIFY v < 12
+), cl AS (
+  SELECT d.doc_id AS cid,
+         CAST(concat('0x', substr(md5('2sa:' ||
+           CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 12 AS a,
+         (CAST(concat('0x', substr(md5('2sa:' ||
+            CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 12
+          + 1 + CAST(concat('0x', substr(md5('2sb:' ||
+            CAST(d.doc_id AS VARCHAR)), 1, 15)) AS BIGINT) % 11) % 12
+           AS b,
+         d.text
+  FROM documents d WHERE d.doc_id < 20
+), lits AS (
+  SELECT c.cid, c.a, c.b,
+         CASE WHEN position(' ' || va.word || ' '
+              IN ' ' || c.text || ' ') > 0 THEN 1 ELSE 0 END AS pa,
+         CASE WHEN position(' ' || vb.word || ' '
+              IN ' ' || c.text || ' ') > 0 THEN 1 ELSE 0 END AS pb
+  FROM cl c JOIN vocab va ON va.v = c.a JOIN vocab vb ON vb.v = c.b
+), edges AS (
+  -- literal node id: 2*var + (1 if positive else 0 for the NEGATION?)
+  -- node(l) = 2*v + pol (pol 1 = positive literal x_v)
+  -- clause (l1 or l2): not-l1 -> l2 and not-l2 -> l1
+  SELECT 2 * a + (1 - pa) AS u, 2 * b + pb AS w FROM lits
+  UNION
+  SELECT 2 * b + (1 - pb), 2 * a + pa FROM lits
+), reach AS (
+  SELECT u, w FROM edges
+  UNION
+  SELECT r.u, e.w FROM reach r JOIN edges e ON e.u = r.w
+), reach2 AS (
+  SELECT u, w FROM reach
+  UNION
+  SELECT CAST(n AS BIGINT), CAST(n AS BIGINT)
+  FROM (SELECT unnest(range(0, 24)) AS n)
+), comp AS (
+  SELECT a.u AS node, min(a.w) AS c
+  FROM reach2 a JOIN reach2 b ON b.u = a.w AND b.w = a.u
+  GROUP BY a.u
+), rc AS (
+  SELECT c.c AS comp, count(DISTINCT c2.c) AS rcount
+  FROM comp c
+  JOIN reach2 r ON r.u = c.node
+  JOIN comp c2 ON c2.node = r.w
+  GROUP BY c.c
+), topo AS (
+  SELECT comp, row_number() OVER (ORDER BY rcount DESC, comp) AS pos
+  FROM rc
+), assign AS (
+  SELECT v.v, v.word,
+         tp.pos > tn.pos AS val,
+         cp.c = cn.c AS contradiction
+  FROM vocab v
+  JOIN comp cp ON cp.node = 2 * v.v + 1
+  JOIN comp cn ON cn.node = 2 * v.v
+  JOIN topo tp ON tp.comp = cp.c
+  JOIN topo tn ON tn.comp = cn.c
+), satq AS (
+  SELECT NOT bool_or(contradiction) AS satisfiable FROM assign
+), astr AS (
+  SELECT string_agg('x' || CAST(v AS VARCHAR) || '='
+                    || CASE WHEN val THEN 'T' ELSE 'F' END, ','
+                    ORDER BY v) AS assignment
+  FROM assign
+), chk AS (
+  SELECT l.cid, l.a, l.b, l.pa, l.pb,
+         (CASE WHEN l.pa = 1 THEN aa.val ELSE NOT aa.val END)
+         OR (CASE WHEN l.pb = 1 THEN ab.val ELSE NOT ab.val END)
+           AS clause_sat
+  FROM lits l
+  JOIN assign aa ON aa.v = l.a
+  JOIN assign ab ON ab.v = l.b
+)
+SELECT CAST(c.cid AS INTEGER) AS clause_id,
+       CAST(c.a AS INTEGER) AS var_a, CAST(c.pa AS INTEGER) AS pol_a,
+       CAST(c.b AS INTEGER) AS var_b, CAST(c.pb AS INTEGER) AS pol_b,
+       c.clause_sat,
+       (SELECT satisfiable FROM satq) AS satisfiable,
+       NOT (SELECT satisfiable FROM satq) OR c.clause_sat
+         AS certificate_ok,
+       (SELECT assignment FROM astr) AS assignment,
+       CAST((SELECT count(DISTINCT comp) FROM topo) AS INTEGER)
+         AS n_components
+FROM chk c
+"""
+
+
+@register("kg_2sat_implication", _TWOSAT_SQL)
+def kg_2sat_implication(spark, sf_dir):
+    """2-SAT solved by the implication-graph SCC method
+    (Aspvall-Plass-Tarjan) over DATA-DERIVED clauses: variables are the
+    12 most frequent corpus words, and each of the first 20 documents
+    contributes one clause whose two md5-chosen variables take the
+    polarity of the word's actual presence in that document. Each
+    clause (l1 ∨ l2) plants the two implications ¬l1→l2, ¬l2→l1;
+    strongly connected components come from pairwise reachability
+    (transitive closure as a recursive join — 24 nodes, the bounded
+    condensation of the lexicon family); a variable sharing a component
+    with its negation certifies UNSAT, otherwise the classic rule —
+    x is true iff comp(x) sits LATER than comp(¬x) in a topological
+    order (reach-count descending is provably topo-consistent since
+    A→B forces a strictly larger reachable set) — produces an
+    assignment whose validity is PINNED per clause: certificate_ok
+    demands every clause evaluate true under the produced assignment
+    whenever satisfiable (the solver cannot bluff — its output is
+    checked against the formula itself). Engine: bounded driver mirror
+    — the 24-node closure is planner-scale metadata; the corpus-scale
+    stages are the vocabulary count and the per-document polarity
+    probes."""
+    docs = _t(spark, sf_dir, "documents")
+    words = (docs.select(F.explode(F.split("text", " ")).alias("w"))
+             .filter(F.col("w") != "")
+             .groupBy("w").count().orderBy(F.desc("count"), "w")
+             .limit(12).collect())
+    vocab = {i: r["w"] for i, r in enumerate(words)}
+    import hashlib as _h
+
+    def h60(s):
+        return int(_h.md5(s.encode()).hexdigest()[:15], 16)
+    drows = (docs.filter(F.col("doc_id") < 20)
+             .select("doc_id", "text").collect())
+    clauses = []
+    for r in sorted(drows, key=lambda r: r["doc_id"]):
+        d = int(r["doc_id"])
+        a = h60(f"2sa:{d}") % 12
+        b = (a + 1 + h60(f"2sb:{d}") % 11) % 12
+        txt = f" {r['text']} "
+        pa = 1 if f" {vocab[a]} " in txt else 0
+        pb = 1 if f" {vocab[b]} " in txt else 0
+        clauses.append((d, a, pa, b, pb))
+    edges = set()
+    for _, a, pa, b, pb in clauses:
+        edges.add((2 * a + (1 - pa), 2 * b + pb))
+        edges.add((2 * b + (1 - pb), 2 * a + pa))
+    reach = {(n, n) for n in range(24)} | set(edges)
+    while True:
+        new = reach | {(u, w2) for (u, w) in reach
+                       for (w1, w2) in edges if w1 == w}
+        if new == reach:
+            break
+        reach = new
+    comp = {n: min(w for w in range(24)
+                   if (n, w) in reach and (w, n) in reach)
+            for n in range(24)}
+    comps = sorted(set(comp.values()))
+    rcount = {c: len({comp[w] for n in range(24) if comp[n] == c
+                      for (u, w) in reach if u == n})
+              for c in comps}
+    pos = {c: i + 1 for i, c in enumerate(
+        sorted(comps, key=lambda c: (-rcount[c], c)))}
+    contradiction = any(comp[2 * v] == comp[2 * v + 1]
+                        for v in range(12))
+    satisfiable = not contradiction
+    val = {v: pos[comp[2 * v + 1]] > pos[comp[2 * v]]
+           for v in range(12)}
+    astr = ",".join(f"x{v}=" + ("T" if val[v] else "F")
+                    for v in range(12))
+    rows = []
+    for cid, a, pa, b, pb in clauses:
+        sat = (val[a] if pa else not val[a]) or \
+              (val[b] if pb else not val[b])
+        rows.append((cid, a, pa, b, pb, sat, satisfiable,
+                     (not satisfiable) or sat, astr, len(comps)))
+    return spark.createDataFrame(
+        rows, "clause_id int, var_a int, pol_a int, var_b int,"
+              " pol_b int, clause_sat boolean, satisfiable boolean,"
+              " certificate_ok boolean, assignment string,"
+              " n_components int")
+
+
+# Chinese-remainder checksum constants: three 16-bit primes, their
+# cofactors M_j = M/p_j and Bezout inverses y_j = M_j^{-1} mod p_j
+# (extended Euclid, verified in-query by the inverse_ok pin).
+_CRT_M = 281170132523303  # 65521 * 65519 * 65497
+_CRT_ROWS = [(65521, 4291297943, 64156),
+             (65519, 4291428937, 22336),
+             (65497, 4292870399, 44533)]
+
+_CRT_SQL = """
+WITH cents AS (
+  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c FROM orders
+), tot AS (
+  SELECT sum(c) AS s, count(*) AS n FROM cents
+), pr AS (
+  SELECT * FROM (VALUES (65521, 4291297943, 64156),
+                        (65519, 4291428937, 22336),
+                        (65497, 4292870399, 44533)) AS t(p, mj, yj)
+), res AS (
+  SELECT p, mj, yj, sum(c % p) % p AS r
+  FROM pr CROSS JOIN cents GROUP BY p, mj, yj
+), rec AS (
+  SELECT sum(((r * yj) % p) * mj) % 281170132523303 AS s_crt FROM res
+)
+SELECT CAST(p AS INTEGER) AS prime,
+       CAST(r AS BIGINT) AS residue,
+       CAST(mj AS BIGINT) AS m_j,
+       CAST(yj AS INTEGER) AS y_j,
+       (mj % p) * yj % p = 1 AS inverse_ok,
+       CAST(((r * yj) % p) * mj AS BIGINT) AS term,
+       CAST((SELECT s_crt FROM rec) AS BIGINT) AS s_crt,
+       CAST((SELECT s FROM tot) AS BIGINT) AS s_direct,
+       (SELECT s_crt FROM rec) = (SELECT s FROM tot) AS crt_ok,
+       (SELECT s FROM tot) < 281170132523303 AS fits_modulus,
+       CAST((SELECT n FROM tot) AS BIGINT) AS n_orders
+FROM res
+"""
+
+
+@register("q_orders_crt_checksum", _CRT_SQL)
+def q_orders_crt_checksum(spark, sf_dir):
+    """Residue-number-system aggregation by the Chinese Remainder
+    Theorem: the exact corpus-wide sum of order prices in cents is
+    computed three times as residues mod three coprime 16-bit primes —
+    sum(c mod p) mod p, a per-partition-safe fold whose intermediate
+    values stay below 2⁶³ at ANY corpus scale (the per-row addend is
+    < 2¹⁶, so even 10¹⁴ rows cannot overflow a long where the direct
+    cents sum eventually would under ANSI mode) — and then reconstructed
+    exactly by Garner-free CRT recombination S = Σ ((r_j·y_j) mod p_j)
+    · M_j mod M, kept inside int64 by reducing r_j·y_j modulo p_j
+    BEFORE the cofactor multiply (each term ≤ p_j·M_j = M ≈ 2.8·10¹⁴).
+    The Bezout inverses are extended-Euclid constants verified in-query
+    ((M_j mod p_j)·y_j ≡ 1, inverse_ok), the reconstruction is pinned
+    equal to the directly computed sum (crt_ok — CRT uniqueness on
+    [0, M)), and the applicability premise S < M is pinned
+    (fits_modulus). Three residue aggregates over a broadcast prime
+    table — one map-side pass, no shuffle beyond the 3-row combine."""
+    cents = _t(spark, sf_dir, "orders").select(
+        F.round(F.col("o_totalprice") * 100).cast("long").alias("c"))
+    tot = cents.agg(F.sum("c").alias("s"), F.count(F.lit(1)).alias("n"))
+    pr = spark.createDataFrame(_CRT_ROWS, "p long, mj long, yj long")
+    res = (cents.crossJoin(F.broadcast(pr))
+           .groupBy("p", "mj", "yj")
+           .agg((F.sum(F.col("c") % F.col("p")) % F.col("p"))
+                .alias("r")))
+    rec = res.agg((F.sum(F.expr("((r * yj) % p) * mj"))
+                   % F.lit(_CRT_M)).alias("s_crt"))
+    return (res.crossJoin(F.broadcast(rec)).crossJoin(F.broadcast(tot))
+            .select(F.col("p").cast("int").alias("prime"),
+                    F.col("r").cast("long").alias("residue"),
+                    F.col("mj").cast("long").alias("m_j"),
+                    F.col("yj").cast("int").alias("y_j"),
+                    (F.expr("(mj % p) * yj % p") == 1)
+                    .alias("inverse_ok"),
+                    F.expr("((r * yj) % p) * mj").cast("long")
+                    .alias("term"),
+                    F.col("s_crt").cast("long").alias("s_crt"),
+                    F.col("s").cast("long").alias("s_direct"),
+                    (F.col("s_crt") == F.col("s")).alias("crt_ok"),
+                    (F.col("s") < F.lit(_CRT_M)).alias("fits_modulus"),
+                    F.col("n").cast("long").alias("n_orders")))
+
+
+_YANNAKAKIS_SQL = """
+WITH c0 AS (
+  SELECT c_custkey FROM customer
+  WHERE c_mktsegment = 'BUILDING' AND c_acctbal > 0
+), o0 AS (
+  SELECT o_orderkey, o_custkey FROM orders WHERE o_orderstatus <> 'P'
+), l0 AS (
+  SELECT l_orderkey, l_linenumber,
+         CAST(round(l_extendedprice * 100) AS BIGINT) AS cents
+  FROM lineitem WHERE l_quantity >= 25
+), o1 AS (  -- bottom-up: O := O semijoin L
+  SELECT * FROM o0 WHERE EXISTS
+    (SELECT 1 FROM l0 WHERE l0.l_orderkey = o0.o_orderkey)
+), c1 AS (  -- bottom-up: C := C semijoin O
+  SELECT * FROM c0 WHERE EXISTS
+    (SELECT 1 FROM o1 WHERE o1.o_custkey = c0.c_custkey)
+), o2 AS (  -- top-down: O := O semijoin C
+  SELECT * FROM o1 WHERE EXISTS
+    (SELECT 1 FROM c1 WHERE c1.c_custkey = o1.o_custkey)
+), l1 AS (  -- top-down: L := L semijoin O
+  SELECT * FROM l0 WHERE EXISTS
+    (SELECT 1 FROM o2 WHERE o2.o_orderkey = l0.l_orderkey)
+), jfull AS (
+  SELECT c0.c_custkey, o0.o_orderkey, l0.l_linenumber, l0.cents
+  FROM c0 JOIN o0 ON o0.o_custkey = c0.c_custkey
+          JOIN l0 ON l0.l_orderkey = o0.o_orderkey
+), jred AS (
+  SELECT c1.c_custkey, o2.o_orderkey, l1.l_linenumber, l1.cents
+  FROM c1 JOIN o2 ON o2.o_custkey = c1.c_custkey
+          JOIN l1 ON l1.l_orderkey = o2.o_orderkey
+), stats AS (
+  -- participation is a semi-join count (NOT a distinct count in the
+  -- join: (l_orderkey, l_linenumber) is not unique in the synthetic
+  -- lineitem, so key-collision would undercount)
+  SELECT 'customer' AS relation,
+         (SELECT count(*) FROM c0) AS rows_filtered,
+         (SELECT count(*) FROM c1) AS rows_reduced,
+         (SELECT count(*) FROM c1 WHERE EXISTS
+            (SELECT 1 FROM jred j WHERE j.c_custkey = c1.c_custkey))
+           AS participants
+  UNION ALL
+  SELECT 'orders',
+         (SELECT count(*) FROM o0), (SELECT count(*) FROM o2),
+         (SELECT count(*) FROM o2 WHERE EXISTS
+            (SELECT 1 FROM jred j WHERE j.o_orderkey = o2.o_orderkey))
+  UNION ALL
+  SELECT 'lineitem',
+         (SELECT count(*) FROM l0), (SELECT count(*) FROM l1),
+         (SELECT count(*) FROM l1 WHERE EXISTS
+            (SELECT 1 FROM jred j WHERE j.o_orderkey = l1.l_orderkey
+               AND j.l_linenumber = l1.l_linenumber))
+), jt AS (
+  SELECT (SELECT count(*) FROM jfull) AS jf,
+         (SELECT count(*) FROM jred) AS jr,
+         (SELECT coalesce(sum(cents), 0) FROM jfull) AS sf,
+         (SELECT coalesce(sum(cents), 0) FROM jred) AS sr
+)
+SELECT relation,
+       CAST(rows_filtered AS BIGINT) AS rows_filtered,
+       CAST(rows_reduced AS BIGINT) AS rows_reduced,
+       CAST(rows_filtered - rows_reduced AS BIGINT) AS dangling_removed,
+       participants = rows_reduced AS all_participate,
+       CAST(jt.jf AS BIGINT) AS join_rows,
+       jt.jf = jt.jr AS join_preserved,
+       CAST(jt.sf AS BIGINT) AS join_cents,
+       jt.sf = jt.sr AS cents_preserved
+FROM stats CROSS JOIN jt
+"""
+
+
+@register("q_yannakakis_reduction", _YANNAKAKIS_SQL)
+def q_yannakakis_reduction(spark, sf_dir):
+    """Yannakakis full-reducer over the acyclic customer—orders—lineitem
+    chain (the 1981 algorithm behind every modern acyclic-join
+    optimizer): base relations are first filtered (BUILDING customers
+    with positive balance, non-'P' orders, quantity ≥ 25 lineitems) so
+    real dangling tuples exist at every level, then one bottom-up
+    semi-join sweep (O ⋉ L, C ⋉ O) and one top-down sweep (O ⋉ C,
+    L ⋉ O) reduce each relation. The theorem the pass exists for is
+    pinned per relation: after the two sweeps EVERY surviving tuple
+    participates in the full join (all_participate — distinct join keys
+    equal the reduced cardinality), and the reduction is lossless —
+    join row count and the exact cents total computed from reduced
+    relations equal the unreduced join's (join_preserved,
+    cents_preserved). The semi-joins are broadcast/shuffle left-semi
+    joins that never materialize the join; at 100 TB this is exactly
+    the pass that keeps an acyclic multiway join linear instead of
+    paying intermediate blow-up."""
+    c0 = (_t(spark, sf_dir, "customer")
+          .filter((F.col("c_mktsegment") == "BUILDING")
+                  & (F.col("c_acctbal") > 0))
+          .select("c_custkey"))
+    o0 = (_t(spark, sf_dir, "orders")
+          .filter(F.col("o_orderstatus") != "P")
+          .select("o_orderkey", "o_custkey"))
+    l0 = (_t(spark, sf_dir, "lineitem")
+          .filter(F.col("l_quantity") >= 25)
+          .select("l_orderkey", "l_linenumber",
+                  F.round(F.col("l_extendedprice") * 100).cast("long")
+                  .alias("cents")))
+    def _semi(left, lkey, right, rkey):
+        # rename the probe key: a fresh attribute id keeps Spark's
+        # ambiguous-self-join detector out of the shared-lineage chain
+        keys = right.select(F.col(rkey).alias("__k")).distinct()
+        return left.join(keys, F.col(lkey) == F.col("__k"),
+                         "left_semi")
+
+    o1 = _semi(o0, "o_orderkey", l0, "l_orderkey")
+    c1 = _semi(c0, "c_custkey", o1, "o_custkey")
+    o2 = _semi(o1, "o_custkey", c1, "c_custkey")
+    l1 = _semi(l0, "l_orderkey", o2, "o_orderkey")
+
+    def _chain(c, o, l):
+        return (c.alias("c")
+                .join(o.alias("o"),
+                      F.col("c.c_custkey") == F.col("o.o_custkey"))
+                .join(l.alias("l"),
+                      F.col("o.o_orderkey") == F.col("l.l_orderkey"))
+                .select(F.col("c.c_custkey").alias("c_custkey"),
+                        F.col("o.o_orderkey").alias("o_orderkey"),
+                        F.col("l.l_linenumber").alias("l_linenumber"),
+                        F.col("l.cents").alias("cents")))
+
+    jfull = _chain(c0, o0, l0)
+    jred = _chain(c1, o2, l1)
+    jred = jred.persist()
+
+    # participation is a semi-join count (NOT a distinct count in the
+    # join: (l_orderkey, l_linenumber) is not unique in the synthetic
+    # lineitem, so key-collision would undercount)
+    def _participants(red, keys):
+        probe = jred.select(*[F.col(k).alias(f"__{k}") for k in keys]) \
+            .distinct()
+        cond = None
+        for k in keys:
+            eq = F.col(k) == F.col(f"__{k}")
+            cond = eq if cond is None else cond & eq
+        return red.join(probe, cond, "left_semi").agg(
+            F.count(F.lit(1)).alias("participants"))
+
+    stats = []
+    for rel, base, red, pk in [
+            ("customer", c0, c1, ["c_custkey"]),
+            ("orders", o0, o2, ["o_orderkey"]),
+            ("lineitem", l0, l1, ["l_orderkey", "l_linenumber"])]:
+        red_keys = red
+        if rel == "lineitem":
+            # jred's lineitem key columns are (o_orderkey, l_linenumber)
+            red_keys = red.select(
+                F.col("l_orderkey").alias("o_orderkey"), "l_linenumber")
+            pk = ["o_orderkey", "l_linenumber"]
+        stats.append(spark.createDataFrame(
+            [(rel,)], "relation string")
+            .crossJoin(F.broadcast(base.agg(
+                F.count(F.lit(1)).alias("rows_filtered"))))
+            .crossJoin(F.broadcast(red.agg(
+                F.count(F.lit(1)).alias("rows_reduced"))))
+            .crossJoin(F.broadcast(_participants(red_keys, pk))))
+    st = stats[0].unionByName(stats[1]).unionByName(stats[2])
+    jt = (jfull.agg(F.count(F.lit(1)).alias("jf"),
+                    F.coalesce(F.sum("cents"), F.lit(0)).alias("sf"))
+          .crossJoin(jred.agg(
+              F.count(F.lit(1)).alias("jr"),
+              F.coalesce(F.sum("cents"), F.lit(0)).alias("sr"))))
+    return (st.crossJoin(F.broadcast(jt))
+            .select("relation",
+                    F.col("rows_filtered").cast("long"),
+                    F.col("rows_reduced").cast("long"),
+                    (F.col("rows_filtered") - F.col("rows_reduced"))
+                    .cast("long").alias("dangling_removed"),
+                    (F.col("participants") == F.col("rows_reduced"))
+                    .alias("all_participate"),
+                    F.col("jf").cast("long").alias("join_rows"),
+                    (F.col("jf") == F.col("jr")).alias("join_preserved"),
+                    F.col("sf").cast("long").alias("join_cents"),
+                    (F.col("sf") == F.col("sr"))
+                    .alias("cents_preserved")))

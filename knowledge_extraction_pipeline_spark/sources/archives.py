@@ -9,10 +9,6 @@ APPNOTE.TXT, the Sun audio file header) and never import the stdlib
 readers. Reference analog: none — the reference ingests loose PDFs
 (core/document_processor.py); shard manifests are the scale-path
 replacement for per-file listings.
-
-All extraction runs as mapInPandas over an opaque binary column — one
-Arrow batch of shards in, one manifest frame out; shards never pass
-through the driver and a 10⁹-shard listing is one narrow scan.
 """
 
 from __future__ import annotations
@@ -23,39 +19,8 @@ import struct
 import tarfile
 import zipfile
 import zlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-SHARD_SCHEMA = T.StructType([
-    T.StructField("shard_id", T.LongType()),
-    T.StructField("fmt", T.StringType()),          # tar | zip
-    T.StructField("payload", T.BinaryType()),
-])
-
-TAR_MEMBER_SCHEMA = T.StructType([
-    T.StructField("shard_id", T.LongType()),
-    T.StructField("name", T.StringType()),
-    T.StructField("size", T.LongType()),
-    T.StructField("mtime", T.LongType()),
-    T.StructField("typeflag", T.StringType()),
-    T.StructField("chksum_ok", T.IntegerType()),
-    T.StructField("content_md5", T.StringType()),
-])
-
-ZIP_ENTRY_SCHEMA = T.StructType([
-    T.StructField("shard_id", T.LongType()),
-    T.StructField("name", T.StringType()),
-    T.StructField("method", T.IntegerType()),      # 0 stored | 8 deflate
-    T.StructField("usize", T.LongType()),
-    T.StructField("crc32", T.LongType()),
-    T.StructField("crc_ok", T.IntegerType()),
-])
-
 
 # ───────────────────────── tar (POSIX ustar) ─────────────────────────
 
@@ -125,32 +90,6 @@ def parse_tar(payload: bytes) -> list[tuple[str, int, int, str, int, str]]:
                     int(calc_ck == stored_ck), md5))
         off += 512 + ((size + 511) // 512) * 512
     return out
-
-
-def synthetic_tar_shards(spark: SparkSession, n: int = 20,
-                         seed: int = 42) -> DataFrame:
-    rows = [(i, "tar", bytearray(build_tar(tar_member_spec(i, seed))))
-            for i in range(n)]
-    return spark.createDataFrame(rows, SHARD_SCHEMA)
-
-
-def tar_member_manifest(shards: DataFrame) -> DataFrame:
-    """Shard → member manifest, one Arrow batch at a time."""
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                for name, size, mtime, tflag, ok, md5 in parse_tar(
-                        bytes(payload)):
-                    rows.append((sid, name, size, mtime, tflag, ok, md5))
-            yield pd.DataFrame(rows, columns=[
-                "shard_id", "name", "size", "mtime", "typeflag",
-                "chksum_ok", "content_md5"])
-
-    return (shards.filter(F.col("fmt") == "tar")
-            .select("shard_id", "payload")
-            .mapInPandas(process, schema=TAR_MEMBER_SCHEMA))
 
 
 # ───────────────────────── zip (APPNOTE.TXT) ─────────────────────────
@@ -224,29 +163,6 @@ def parse_zip_central_directory(
     return out
 
 
-def synthetic_zip_shards(spark: SparkSession, n: int = 20,
-                         seed: int = 42) -> DataFrame:
-    rows = [(i, "zip", bytearray(build_zip(zip_entry_spec(i, seed))))
-            for i in range(n)]
-    return spark.createDataFrame(rows, SHARD_SCHEMA)
-
-
-def zip_entry_manifest(shards: DataFrame) -> DataFrame:
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                for name, method, usize, crc, ok in \
-                        parse_zip_central_directory(bytes(payload)):
-                    rows.append((sid, name, method, usize, crc, ok))
-            yield pd.DataFrame(rows, columns=[
-                "shard_id", "name", "method", "usize", "crc32", "crc_ok"])
-
-    return (shards.filter(F.col("fmt") == "zip")
-            .select("shard_id", "payload")
-            .mapInPandas(process, schema=ZIP_ENTRY_SCHEMA))
-
-
 # ───────────────────────── Sun AU (.snd) ─────────────────────────
 
 AU_ULAW = 1
@@ -291,66 +207,7 @@ def decode_au(payload: bytes) -> tuple[int, np.ndarray]:
     return rate, x.astype(np.int16)
 
 
-def synthetic_au_media(spark: SparkSession, n: int = 24,
-                       seed: int = 42) -> DataFrame:
-    """Deterministic REAL AU table: id-dependent tones, alternating μ-law
-    and PCM16-BE encodings (both genuine Sun audio headers)."""
-    from .multimodal import MEDIA_SCHEMA
-    rows = []
-    for i in range(n):
-        rate = 8000
-        ns = 280 + (i % 5) * 64
-        freq = 170.0 + (i * 43 + seed) % 520
-        amp = 13000 if i % 2 == 0 else 11000
-        t = np.arange(ns)
-        x = (np.sin(2 * np.pi * freq * t / rate) * amp).astype(np.int16)
-        enc = AU_PCM16 if i % 2 == 0 else AU_ULAW
-        payload = encode_au(rate, x, enc)
-        rows.append((i, "audio", "audio/basic", bytearray(payload),
-                     {"encoding": str(enc)}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def extract_au_features(media: DataFrame) -> DataFrame:
-    """Same cheap audio-quality features as the WAV path (rate, duration,
-    RMS, zero crossings) over Sun AU payloads."""
-    from .multimodal import AUDIO_FEATURES_SCHEMA
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, x = decode_au(bytes(payload))
-                xi = x.astype(np.int64)
-                rms = float(np.sqrt(float((xi * xi).sum())
-                                    / max(len(x), 1)))
-                zc = int(((x[:-1] < 0) != (x[1:] < 0)).sum()) \
-                    if len(x) > 1 else 0
-                rows.append((mid, rate, len(x), len(x) / rate, rms, zc))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "sample_rate", "n_samples", "duration_s",
-                "rms", "zero_crossings"])
-
-    return (media.filter(F.col("kind") == "audio")
-            .select("media_id", "payload")
-            .mapInPandas(process, schema=AUDIO_FEATURES_SCHEMA))
-
-
 # ───────────────────────── gzip (RFC 1952) ─────────────────────────
-
-GZIP_MEMBER_SCHEMA = T.StructType([
-    T.StructField("shard_id", T.LongType()),
-    T.StructField("member_idx", T.IntegerType()),
-    T.StructField("name", T.StringType()),
-    T.StructField("mtime", T.LongType()),
-    T.StructField("flg", T.IntegerType()),
-    T.StructField("os_byte", T.IntegerType()),
-    T.StructField("usize", T.LongType()),
-    T.StructField("crc32", T.LongType()),
-    T.StructField("crc_ok", T.IntegerType()),
-    T.StructField("content_md5", T.StringType()),
-])
-
 
 def gzip_member_spec(shard_id: int,
                      seed: int = 42) -> list[tuple[str, bytes, int, int]]:
@@ -448,34 +305,3 @@ def parse_gzip_members(
         pos = tail_at + 8
         idx += 1
     return out
-
-
-def synthetic_gzip_shards(spark: SparkSession, n: int = 20,
-                          seed: int = 42) -> DataFrame:
-    rows = []
-    for i in range(n):
-        blob = b"".join(build_gzip_member(*m)
-                        for m in gzip_member_spec(i, seed))
-        rows.append((i, "gz", bytearray(blob)))
-    return spark.createDataFrame(rows, SHARD_SCHEMA)
-
-
-def gzip_member_manifest(shards: DataFrame) -> DataFrame:
-    """Shard → member manifest, one Arrow batch at a time (same narrow
-    mapInPandas scan shape as the tar/zip walks)."""
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for sid, payload in zip(pdf["shard_id"], pdf["payload"]):
-                for (idx, name, mtime, flg, osb, usize, crc, ok,
-                     md5) in parse_gzip_members(bytes(payload)):
-                    rows.append((sid, idx, name, mtime, flg, osb, usize,
-                                 crc, ok, md5))
-            yield pd.DataFrame(rows, columns=[
-                "shard_id", "member_idx", "name", "mtime", "flg",
-                "os_byte", "usize", "crc32", "crc_ok", "content_md5"])
-
-    return (shards.filter(F.col("fmt") == "gz")
-            .select("shard_id", "payload")
-            .mapInPandas(process, schema=GZIP_MEMBER_SCHEMA))

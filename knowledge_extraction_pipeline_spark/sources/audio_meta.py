@@ -6,40 +6,13 @@ corpus manifest needs (rates, channels, durations, frame accounting,
 VBR detection, embedded signature) is parsed bit-exactly from the public
 specs (xiph.org FLAC format; ISO/IEC 11172-3 header layout). Writers pack
 the bytes with int.to_bytes/manual bit math; parsers re-derive fields
-independently. Runs as mapInPandas over opaque binary payloads — the same
-shard-scale plumbing as every multimodal path."""
+independently."""
 
 from __future__ import annotations
 
-import hashlib
 import struct
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-FLAC_INFO_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("sample_rate", T.IntegerType()),
-    T.StructField("channels", T.IntegerType()),
-    T.StructField("bits_per_sample", T.IntegerType()),
-    T.StructField("total_samples", T.LongType()),
-    T.StructField("n_blocks", T.IntegerType()),
-    T.StructField("audio_md5", T.StringType()),
-])
-
-MP3_FRAMES_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("sample_rate", T.IntegerType()),
-    T.StructField("n_frames", T.LongType()),
-    T.StructField("duration_e6", T.LongType()),
-    T.StructField("sum_bitrate_kbps", T.LongType()),
-    T.StructField("is_vbr", T.IntegerType()),
-])
-
 
 # ───────────────────────── FLAC STREAMINFO ─────────────────────────
 
@@ -96,46 +69,6 @@ def parse_flac_streaminfo(
         raise NotImplementedError("no STREAMINFO block")
     rate, channels, bps, total, md5hex = info
     return rate, channels, bps, total, n_blocks, md5hex
-
-
-def flac_spec(i: int, seed: int = 42) -> tuple[int, int, int, int, bytes]:
-    """(rate, channels, bps, total_samples, md5) as pure formulas of i."""
-    rate = (8000, 16000, 22050, 44100, 48000, 96000)[i % 6]
-    channels = 1 + i % 2
-    bps = (16, 24)[i % 2]
-    total = 10_000 + i * 7_777 + (i * i * 131 + seed) % 5_000
-    md5 = hashlib.md5(f"flacsig:{seed}:{i}".encode()).digest()
-    return rate, channels, bps, total, md5
-
-
-def synthetic_flac_media(spark: SparkSession, n: int = 24,
-                         seed: int = 42) -> DataFrame:
-    from .multimodal import MEDIA_SCHEMA
-    rows = []
-    for i in range(n):
-        rate, ch, bps, total, md5 = flac_spec(i, seed)
-        payload = encode_flac_streaminfo(
-            4096, 4096, 14, 14 + i % 9, rate, ch, bps, total, md5,
-            padding=32 + i % 64)
-        rows.append((i, "audio", "audio/flac", bytearray(payload), {}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def extract_flac_info(media: DataFrame) -> DataFrame:
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, ch, bps, total, nb, md5hex = \
-                    parse_flac_streaminfo(bytes(payload))
-                rows.append((mid, rate, ch, bps, total, nb, md5hex))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "sample_rate", "channels", "bits_per_sample",
-                "total_samples", "n_blocks", "audio_md5"])
-
-    return (media.filter(F.col("kind") == "audio")
-            .select("media_id", "payload")
-            .mapInPandas(process, schema=FLAC_INFO_SCHEMA))
 
 
 # ───────────────────── MPEG-1 Layer III frames ─────────────────────
@@ -211,31 +144,6 @@ def parse_mp3_frames(payload: bytes) -> tuple[int, int, int, int]:
         raise NotImplementedError("no frames or mixed sample rates")
     return (rates.pop(), len(bitrates), sum(bitrates),
             int(len(set(bitrates)) > 1))
-
-
-def synthetic_mp3_media(spark: SparkSession, n: int = 21,
-                        seed: int = 42) -> DataFrame:
-    from .multimodal import MEDIA_SCHEMA
-    rows = [(i, "audio", "audio/mpeg", bytearray(encode_mp3(i, seed)), {})
-            for i in range(n)]
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def extract_mp3_frames(media: DataFrame) -> DataFrame:
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, nf, sum_br, vbr = parse_mp3_frames(bytes(payload))
-                dur_e6 = nf * 1152 * 1_000_000 // rate
-                rows.append((mid, rate, nf, dur_e6, sum_br, vbr))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "sample_rate", "n_frames", "duration_e6",
-                "sum_bitrate_kbps", "is_vbr"])
-
-    return (media.filter(F.col("kind") == "audio")
-            .select("media_id", "payload")
-            .mapInPandas(process, schema=MP3_FRAMES_SCHEMA))
 
 
 # ───────────────── IMA ADPCM (WAV format 0x11) ─────────────────
@@ -365,46 +273,3 @@ def decode_wav_adpcm(payload: bytes) -> tuple[int, np.ndarray]:
                 pred, idx = _ima_decode_nibble(nib, pred, idx)
                 out.append(pred)
     return rate, np.array(out, np.int16)
-
-
-def synthetic_adpcm_media(spark: SparkSession, n: int = 20,
-                          seed: int = 42) -> DataFrame:
-    """Deterministic REAL IMA-ADPCM WAV table: id-dependent tones padded
-    to whole blocks (the encoder pads by re-encoding the held predictor,
-    so decode length is always a block multiple — the documented ADPCM
-    convention)."""
-    from .multimodal import MEDIA_SCHEMA
-    rows = []
-    for i in range(n):
-        rate = 8000
-        ns = 500 + (i % 4) * 101
-        freq = 160.0 + (i * 47 + seed) % 440
-        t = np.arange(ns)
-        x = (np.sin(2 * np.pi * freq * t / rate) * 12000).astype(np.int16)
-        rows.append((i, "audio", "audio/wav",
-                     bytearray(encode_wav_adpcm(rate, x)), {}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def extract_adpcm_features(media: DataFrame) -> DataFrame:
-    from .multimodal import AUDIO_FEATURES_SCHEMA
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as _np
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, x = decode_wav_adpcm(bytes(payload))
-                xi = x.astype(_np.int64)
-                rms = float(_np.sqrt(float((xi * xi).sum())
-                                     / max(len(x), 1)))
-                zc = int(((x[:-1] < 0) != (x[1:] < 0)).sum()) \
-                    if len(x) > 1 else 0
-                rows.append((mid, rate, len(x), len(x) / rate, rms, zc))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "sample_rate", "n_samples", "duration_s",
-                "rms", "zero_crossings"])
-
-    return (media.filter(F.col("kind") == "audio")
-            .select("media_id", "payload")
-            .mapInPandas(process, schema=AUDIO_FEATURES_SCHEMA))

@@ -14,40 +14,15 @@ differently decode correctly, and an unknown primitive type is an honest
 refusal, not a guess. Sync markers are verified after every block and
 byte-length declarations are checked against actual consumption.
 
-The oracle re-derives every manifest column from the pure (file_id,
-seed) spec formulas; golden vectors in tests/test_avrofile.py pin the
+Golden vectors in tests/test_avrofile.py pin the
 writer's long/string encodings to spec-known bytes so writer/reader bugs
-cannot cancel. Extraction runs as mapInPandas over an opaque binary
-column — fully distributed.
+cannot cancel.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-AVRO_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("codec", T.StringType()),
-    T.StructField("n_fields", T.IntegerType()),
-    T.StructField("field_names", T.StringType()),
-    T.StructField("n_blocks", T.IntegerType()),
-    T.StructField("n_records", T.LongType()),
-    T.StructField("sum_amount", T.LongType()),
-    T.StructField("names_md5", T.StringType()),
-    T.StructField("n_active", T.LongType()),
-    T.StructField("sync_ok", T.BooleanType()),
-])
 
 
 def avro_file_spec(i: int, seed: int = 42) -> list[tuple[int, str, bool]]:
@@ -108,12 +83,6 @@ def build_avro(i: int, seed: int = 42, block_records: int = 8) -> bytes:
                         for a, lb, act in chunk)
         out += _zz_long(len(chunk)) + _zz_long(len(body)) + body + sync
     return bytes(out)
-
-
-def synthetic_avro_files(spark: SparkSession, n: int,
-                         seed: int = 42) -> DataFrame:
-    rows = [(i, build_avro(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, FILE_SCHEMA)
 
 
 # ── reader (schema-driven; shares no layout constants with the writer) ──
@@ -193,30 +162,3 @@ def parse_avro(buf: bytes) -> dict:
         n_blocks += 1
     return {"codec": codec, "fields": fields, "records": records,
             "n_blocks": n_blocks, "sync_ok": sync_ok}
-
-
-def avro_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                p = parse_avro(bytes(payload))
-                names = [n for n, _ in p["fields"]]
-                labels = "|".join(r["label"] for r in p["records"])
-                rows.append({
-                    "file_id": int(file_id),
-                    "codec": p["codec"],
-                    "n_fields": len(names),
-                    "field_names": ",".join(names),
-                    "n_blocks": p["n_blocks"],
-                    "n_records": len(p["records"]),
-                    "sum_amount": sum(r["amount"] for r in p["records"]),
-                    "names_md5": hashlib.md5(labels.encode()).hexdigest(),
-                    "n_active": sum(1 for r in p["records"]
-                                    if r["active"]),
-                    "sync_ok": p["sync_ok"],
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              AVRO_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, AVRO_MANIFEST_SCHEMA)

@@ -9,37 +9,11 @@ canonical-ordering rule rather than silently accepting unsorted input,
 because info-dict hashing depends on it. Golden vectors in
 tests/test_bencodefile.py pin both directions to spec examples
 (i42e, 4:spam, l4:spame, d3:cow3:mooe).
-
-The oracle re-derives every manifest column from the pure (file_id,
-seed) spec formulas. Extraction runs as mapInPandas over an opaque
-binary column — fully distributed.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-BENC_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-BENC_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("announce", T.StringType()),
-    T.StructField("name", T.StringType()),
-    T.StructField("piece_length", T.LongType()),
-    T.StructField("total_length", T.LongType()),
-    T.StructField("n_pieces", T.IntegerType()),
-    T.StructField("n_trackers", T.IntegerType()),
-    T.StructField("creation_date", T.LongType()),
-    T.StructField("pieces_md5", T.StringType()),
-])
 
 
 def torrent_spec(i: int, seed: int = 42) -> dict:
@@ -96,12 +70,6 @@ def build_torrent(i: int, seed: int = 42) -> bytes:
     })
 
 
-def synthetic_torrents(spark: SparkSession, n: int,
-                       seed: int = 42) -> DataFrame:
-    rows = [(i, build_torrent(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, BENC_FILE_SCHEMA)
-
-
 # ── reader ──────────────────────────────────────────────────────────────
 
 def _decode(buf: bytes, pos: int):
@@ -152,30 +120,3 @@ def decode_bencode(buf: bytes):
     if pos != len(buf):
         raise ValueError("trailing bytes after bencode value")
     return v
-
-
-def torrent_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                t = decode_bencode(bytes(payload))
-                info = t["info"]
-                pieces = info["pieces"]
-                if len(pieces) % 20:
-                    raise ValueError("pieces not a multiple of 20 bytes")
-                rows.append({
-                    "file_id": int(file_id),
-                    "announce": t["announce"].decode(),
-                    "name": info["name"].decode(),
-                    "piece_length": info["piece length"],
-                    "total_length": info["length"],
-                    "n_pieces": len(pieces) // 20,
-                    "n_trackers": len(t.get("announce-list", [])),
-                    "creation_date": t["creation date"],
-                    "pieces_md5": hashlib.md5(pieces).hexdigest(),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              BENC_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, BENC_MANIFEST_SCHEMA)

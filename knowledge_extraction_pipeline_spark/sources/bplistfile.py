@@ -10,39 +10,12 @@ UTF-16BE string, 0xA array and 0xD dict (ref-width object references,
 keys then values), with the 0xF length-escape (length lives in a
 following int object). Reals/dates/sets are honestly refused. Cycle
 protection bounds the reference walk.
-
-The oracle re-derives every manifest column from the pure (doc_id,
-seed) spec formulas. Runs as mapInPandas over an opaque binary column.
 """
 
 from __future__ import annotations
 
-import hashlib
 import plistlib
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-BP_FILE_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-BP_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("n_objects", T.IntegerType()),
-    T.StructField("top_keys", T.StringType()),
-    T.StructField("name", T.StringType()),
-    T.StructField("count", T.LongType()),
-    T.StructField("n_flags", T.IntegerType()),
-    T.StructField("n_true_flags", T.IntegerType()),
-    T.StructField("blob_md5", T.StringType()),
-    T.StructField("nested_depth", T.IntegerType()),
-    T.StructField("unicode_name", T.StringType()),
-])
 
 
 def bplist_doc_spec(i: int, seed: int = 42) -> dict:
@@ -63,12 +36,6 @@ def build_bplist(i: int, seed: int = 42) -> bytes:
          "blob": s["blob"], "unicode_name": s["unicode_name"],
          "nested": s["nested"]},
         fmt=plistlib.FMT_BINARY, sort_keys=True)
-
-
-def synthetic_bplists(spark: SparkSession, n: int,
-                      seed: int = 42) -> DataFrame:
-    rows = [(i, build_bplist(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, BP_FILE_SCHEMA)
 
 
 # ── reader ──────────────────────────────────────────────────────────────
@@ -141,35 +108,3 @@ def parse_bplist(raw: bytes):
         raise NotImplementedError(f"bplist marker kind 0x{kind:x}")
 
     return obj(top), n_obj
-
-
-def _depth(v) -> int:
-    if isinstance(v, dict):
-        return 1 + max((_depth(x) for x in v.values()), default=0)
-    if isinstance(v, list):
-        return 1 + max((_depth(x) for x in v), default=0)
-    return 0
-
-
-def bplist_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                top, n_obj = parse_bplist(bytes(payload))
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "n_objects": n_obj,
-                    "top_keys": ",".join(sorted(top.keys())),
-                    "name": top["name"],
-                    "count": top["count"],
-                    "n_flags": len(top["flags"]),
-                    "n_true_flags": sum(1 for f in top["flags"] if f),
-                    "blob_md5": hashlib.md5(top["blob"]).hexdigest(),
-                    "nested_depth": _depth(top),
-                    "unicode_name": top["unicode_name"],
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              BP_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, BP_MANIFEST_SCHEMA)

@@ -12,40 +12,12 @@ items and other simple values are honestly refused rather than
 half-parsed — the msgpack discipline applied to CBOR's argument
 grammar.
 
-The oracle re-derives every manifest column from the pure
-cbor_file_spec formulas. Extraction runs as mapInPandas over an
-opaque binary column — fully distributed.
-
 Reference analog: none (the reference ingests PDFs only,
 core/document_processor.py:91-177).
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-CBOR_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-CBOR_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("n_top_items", T.IntegerType()),
-    T.StructField("n_ints", T.IntegerType()),
-    T.StructField("n_texts", T.IntegerType()),
-    T.StructField("n_arrays", T.IntegerType()),
-    T.StructField("n_maps", T.IntegerType()),
-    T.StructField("max_depth", T.IntegerType()),
-    T.StructField("int_sum", T.LongType()),
-    T.StructField("total_bytes", T.LongType()),
-    T.StructField("content_md5", T.StringType()),
-])
 
 # integers straddling every shortest-form promotion boundary
 _BOUNDARY_INTS = [0, 1, 23, 24, 255, 256, 65535, 65536,
@@ -119,12 +91,6 @@ def encode_cbor(obj) -> bytes:
 
 def build_cbor(i: int, seed: int = 42) -> bytes:
     return encode_cbor(cbor_file_spec(i, seed))
-
-
-def synthetic_cbors(spark: SparkSession, n: int,
-                    seed: int = 42) -> DataFrame:
-    rows = [(i, build_cbor(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, CBOR_FILE_SCHEMA)
 
 
 # ── reader ──────────────────────────────────────────────────────────────
@@ -233,63 +199,3 @@ def parse_cbor(raw: bytes) -> dict:
     if not isinstance(val, list):
         raise ValueError("expected a top-level array")
     return {"value": val, "stats": stats}
-
-
-def _render(obj) -> str:
-    """Deterministic repr shared with the oracle (sorted maps,
-    bytes as hex)."""
-    if isinstance(obj, bool) or obj is None:
-        return str(obj)
-    if isinstance(obj, int):
-        return str(obj)
-    if isinstance(obj, bytes):
-        return "h'" + obj.hex() + "'"
-    if isinstance(obj, str):
-        return '"' + obj + '"'
-    if isinstance(obj, list):
-        return "[" + ",".join(_render(x) for x in obj) + "]"
-    if isinstance(obj, dict):
-        return "{" + ",".join(
-            _render(k) + ":" + _render(v)
-            for k, v in sorted(obj.items(),
-                               key=lambda kv: encode_cbor(kv[0]))) + "}"
-    raise TypeError
-
-
-def _int_walk(obj) -> int:
-    if isinstance(obj, bool) or obj is None:
-        return 0
-    if isinstance(obj, int):
-        return obj
-    if isinstance(obj, list):
-        return sum(_int_walk(x) for x in obj)
-    if isinstance(obj, dict):
-        return sum(_int_walk(v) for v in obj.values())
-    return 0
-
-
-def cbor_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                raw = bytes(payload)
-                r = parse_cbor(raw)
-                st = r["stats"]
-                rows.append({
-                    "file_id": int(file_id),
-                    "n_top_items": len(r["value"]),
-                    "n_ints": st.get("ints", 0),
-                    "n_texts": st.get("texts", 0),
-                    "n_arrays": st.get("arrays", 0),
-                    "n_maps": st.get("maps", 0),
-                    "max_depth": st.get("depth", 0),
-                    "int_sum": _int_walk(r["value"]),
-                    "total_bytes": len(raw),
-                    "content_md5": hashlib.md5(
-                        _render(r["value"]).encode()).hexdigest(),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              CBOR_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, CBOR_MANIFEST_SCHEMA)

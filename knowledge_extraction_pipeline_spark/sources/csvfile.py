@@ -12,35 +12,10 @@ closing quote) is an honest ValueError, not a guess.
 
 Fixture rows deliberately contain commas, double quotes, CRLF and LF
 inside fields, and empty fields, so every state transition is genuinely
-exercised. The oracle re-derives all manifest columns from the pure
-(file_id, seed) spec formulas. Extraction runs as mapInPandas over an
-opaque binary column — fully distributed.
+exercised.
 """
 
 from __future__ import annotations
-
-import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-CSV_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-CSV_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("n_records", T.LongType()),
-    T.StructField("n_fields", T.IntegerType()),
-    T.StructField("sum_a", T.LongType()),
-    T.StructField("text_md5", T.StringType()),
-    T.StructField("n_hostile_fields", T.LongType()),
-    T.StructField("n_embedded_newlines", T.LongType()),
-    T.StructField("n_empty_fields", T.LongType()),
-])
 
 
 def csv_file_spec(i: int, seed: int = 42) -> list[tuple[int, str, str]]:
@@ -79,12 +54,6 @@ def build_csv(i: int, seed: int = 42) -> bytes:
     for a, b, c in csv_file_spec(i, seed):
         w.writerow([a, b, c])
     return buf.getvalue().encode()
-
-
-def synthetic_csv_files(spark: SparkSession, n: int,
-                        seed: int = 42) -> DataFrame:
-    rows = [(i, build_csv(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, CSV_FILE_SCHEMA)
 
 
 # ── reader: the four-state RFC 4180 machine ─────────────────────────────
@@ -164,33 +133,3 @@ def parse_csv(raw: bytes) -> list[list[str]]:
     if field or record or state in ("UNQUOTED", "QUOTE_SEEN"):
         end_record()     # final record without terminator
     return records
-
-
-def csv_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                recs = parse_csv(bytes(payload))
-                widths = {len(r) for r in recs}
-                if len(widths) != 1:
-                    raise ValueError("ragged csv")
-                flat = [f for r in recs for f in r]
-                joined = "|".join(f for r in recs for f in r[1:])
-                out.append({
-                    "file_id": int(file_id),
-                    "n_records": len(recs),
-                    "n_fields": widths.pop(),
-                    "sum_a": sum(int(r[0]) for r in recs),
-                    "text_md5": hashlib.md5(joined.encode()).hexdigest(),
-                    "n_hostile_fields": sum(
-                        1 for f in flat
-                        if any(x in f for x in (',', '"', '\r', '\n'))),
-                    "n_embedded_newlines": sum(
-                        f.count("\n") for f in flat),
-                    "n_empty_fields": sum(1 for f in flat if f == ""),
-                })
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             CSV_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, CSV_MANIFEST_SCHEMA)

@@ -13,37 +13,10 @@ tests/test_derfile.py pin the classic encodings (OID 1.2.840.113549
 Fixtures are certificate-SHAPED documents: SEQUENCE { serial INTEGER,
 subject UTF8String, validity SEQUENCE { UTCTime, UTCTime }, sigalg
 OID, key BIT STRING } — long-form lengths forced by >127-byte keys.
-The oracle re-derives every manifest column from the pure (doc_id,
-seed) spec formulas. Extraction runs as mapInPandas over an opaque
-binary column.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-DER_FILE_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-DER_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("serial", T.LongType()),
-    T.StructField("subject", T.StringType()),
-    T.StructField("not_before", T.StringType()),
-    T.StructField("not_after", T.StringType()),
-    T.StructField("sigalg_oid", T.StringType()),
-    T.StructField("key_bits", T.IntegerType()),
-    T.StructField("key_md5", T.StringType()),
-    T.StructField("total_bytes", T.IntegerType()),
-    T.StructField("max_depth", T.IntegerType()),
-])
 
 _OIDS = ["1.2.840.113549.1.1.11", "1.2.840.10045.4.3.2",
          "1.3.101.112", "1.2.840.113549.1.1.5"]
@@ -109,12 +82,6 @@ def build_der(i: int, seed: int = 42) -> bytes:
             + _der_oid(s["sigalg"])
             + _tlv(0x03, b"\x00" + s["key"]))
     return _tlv(0x30, body)
-
-
-def synthetic_der_docs(spark: SparkSession, n: int,
-                       seed: int = 42) -> DataFrame:
-    rows = [(i, build_der(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, DER_FILE_SCHEMA)
 
 
 # ── reader ──────────────────────────────────────────────────────────────
@@ -186,28 +153,3 @@ def parse_cert_like(buf: bytes) -> dict:
         "key_bits": 8 * len(key_body[1:]) - unused,
         "max_depth": 3,
     }
-
-
-def der_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                p = parse_cert_like(raw)
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "serial": p["serial"],
-                    "subject": p["subject"],
-                    "not_before": p["not_before"],
-                    "not_after": p["not_after"],
-                    "sigalg_oid": p["sigalg_oid"],
-                    "key_bits": p["key_bits"],
-                    "key_md5": hashlib.md5(p["key"]).hexdigest(),
-                    "total_bytes": len(raw),
-                    "max_depth": p["max_depth"],
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              DER_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, DER_MANIFEST_SCHEMA)

@@ -11,39 +11,13 @@ error, not a hang), enforces big-endian header/count fields, and
 decodes A (IPv4) and CNAME RDATA, skipping unknown RR types by
 RDLENGTH the way the spec requires.
 
-The oracle re-derives every manifest column from the pure (msg_id,
-seed) spec formulas; golden vectors in tests/test_dnsfile.py pin the
-compression encoding to RFC 1035 §4.1.4 semantics. Extraction runs as
-mapInPandas over an opaque binary column.
+Golden vectors in tests/test_dnsfile.py pin the
+compression encoding to RFC 1035 §4.1.4 semantics.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-DNS_FILE_SCHEMA = T.StructType([
-    T.StructField("msg_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-DNS_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("msg_id", T.LongType()),
-    T.StructField("txn_id", T.IntegerType()),
-    T.StructField("qname", T.StringType()),
-    T.StructField("n_answers", T.IntegerType()),
-    T.StructField("n_a_records", T.IntegerType()),
-    T.StructField("n_cnames", T.IntegerType()),
-    T.StructField("n_skipped_rrs", T.IntegerType()),
-    T.StructField("ips_md5", T.StringType()),
-    T.StructField("min_ttl", T.LongType()),
-    T.StructField("n_pointer_jumps", T.IntegerType()),
-])
 
 
 def dns_msg_spec(i: int, seed: int = 42) -> dict:
@@ -92,12 +66,6 @@ def build_dns(i: int, seed: int = 42) -> bytes:
                            ttl, 4)
         out += bytes(int(x) for x in ip.split("."))
     return bytes(out)
-
-
-def synthetic_dns(spark: SparkSession, n: int,
-                  seed: int = 42) -> DataFrame:
-    rows = [(i, build_dns(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, DNS_FILE_SCHEMA)
 
 
 # ── reader ──────────────────────────────────────────────────────────────
@@ -173,28 +141,3 @@ def parse_dns(buf: bytes) -> dict:
             "a_records": a_records, "cnames": cnames,
             "n_skipped": skipped, "min_ttl": min_ttl,
             "n_pointer_jumps": jumps}
-
-
-def dns_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for msg_id, payload in zip(pdf["msg_id"], pdf["payload"]):
-                p = parse_dns(bytes(payload))
-                rows.append({
-                    "msg_id": int(msg_id),
-                    "txn_id": p["txn_id"],
-                    "qname": p["qname"],
-                    "n_answers": p["n_answers"],
-                    "n_a_records": len(p["a_records"]),
-                    "n_cnames": len(p["cnames"]),
-                    "n_skipped_rrs": p["n_skipped"],
-                    "ips_md5": hashlib.md5(
-                        "|".join(p["a_records"]).encode()).hexdigest(),
-                    "min_ttl": p["min_ttl"],
-                    "n_pointer_jumps": p["n_pointer_jumps"],
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              DNS_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, DNS_MANIFEST_SCHEMA)

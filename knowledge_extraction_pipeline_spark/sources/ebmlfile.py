@@ -14,10 +14,6 @@ descends the known master elements (EBML header, Segment, Info),
 decodes big-endian unsigned ints and UTF-8 strings for known leaf
 IDs, and skips unknown leaves by their declared size, counting them.
 
-The oracle re-derives every manifest column from the pure
-ebml_file_spec formulas. Extraction runs as mapInPandas over an
-opaque binary column — fully distributed.
-
 Reference analog: none; this sits beside the MP4 box walk and the
 AVI RIFF walk as the third video-container discipline (box sizes /
 chunk alignment / varint envelopes).
@@ -25,30 +21,6 @@ chunk alignment / varint envelopes).
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-EBML_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-EBML_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("n_elements", T.IntegerType()),
-    T.StructField("max_depth", T.IntegerType()),
-    T.StructField("doctype", T.StringType()),
-    T.StructField("doctype_version", T.LongType()),
-    T.StructField("timecode_scale", T.LongType()),
-    T.StructField("n_wide_sizes", T.IntegerType()),
-    T.StructField("n_unknown_leaves", T.IntegerType()),
-    T.StructField("id_xor", T.LongType()),
-    T.StructField("strings_md5", T.StringType()),
-])
 
 # known element IDs (as written, marker bit included)
 EBML_HDR, SEGMENT, INFO = 0x1A45DFA3, 0x18538067, 0x1549A966
@@ -128,12 +100,6 @@ def build_ebml(i: int, seed: int = 42) -> bytes:
             + _elem(SEGMENT, seg_body, extra_width=1))
 
 
-def synthetic_ebmls(spark: SparkSession, n: int,
-                    seed: int = 42) -> DataFrame:
-    rows = [(i, build_ebml(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, EBML_FILE_SCHEMA)
-
-
 # ── reader ──────────────────────────────────────────────────────────────
 
 def read_vint(raw: bytes, pos: int,
@@ -196,28 +162,3 @@ def parse_ebml(raw: bytes) -> dict:
 
     walk(0, len(raw), 1)
     return st
-
-
-def ebml_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                r = parse_ebml(bytes(payload))
-                out.append({
-                    "file_id": int(file_id),
-                    "n_elements": r["n"],
-                    "max_depth": r["depth"],
-                    "doctype": r["doctype"],
-                    "doctype_version": r["dt_version"],
-                    "timecode_scale": r["tcs"],
-                    "n_wide_sizes": r["wide"],
-                    "n_unknown_leaves": r["unknown"],
-                    "id_xor": r["xor"],
-                    "strings_md5": hashlib.md5(
-                        "|".join(r["strings"]).encode()).hexdigest(),
-                })
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             EBML_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, EBML_MANIFEST_SCHEMA)

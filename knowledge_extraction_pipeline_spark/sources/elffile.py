@@ -13,41 +13,12 @@ table (and the e_shstrndx pointer validated), and the entry point
 checked to fall inside an executable PT_LOAD's virtual range.
 Unknown classes/encodings, bad versions and truncations are honestly
 refused.
-
-The oracle re-derives every manifest column from the pure
-elf_file_spec formulas. Extraction runs as mapInPandas over an
-opaque binary column — fully distributed.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-ELF_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-ELF_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("is64", T.BooleanType()),
-    T.StructField("big_endian", T.BooleanType()),
-    T.StructField("e_type", T.IntegerType()),
-    T.StructField("machine", T.IntegerType()),
-    T.StructField("n_phdrs", T.IntegerType()),
-    T.StructField("n_loads", T.IntegerType()),
-    T.StructField("n_sections", T.IntegerType()),
-    T.StructField("sizes_ok", T.BooleanType()),
-    T.StructField("entry_in_exec_load", T.BooleanType()),
-    T.StructField("total_filesz", T.LongType()),
-    T.StructField("names_md5", T.StringType()),
-])
 
 _MACHINES = [0x3E, 0xB7, 0xF3]          # x86-64, aarch64, riscv
 
@@ -138,12 +109,6 @@ def build_elf(i: int, seed: int = 42) -> bytes:
     return blob
 
 
-def synthetic_elfs(spark: SparkSession, n: int,
-                   seed: int = 42) -> DataFrame:
-    rows = [(i, build_elf(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, ELF_FILE_SCHEMA)
-
-
 # ── reader ──────────────────────────────────────────────────────────────
 
 def parse_elf(raw: bytes) -> dict:
@@ -214,27 +179,3 @@ def parse_elf(raw: bytes) -> dict:
         "total_filesz": sum(f for _, _, _, f in loads),
         "names": names,
     }
-
-
-def elf_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                r = parse_elf(bytes(payload))
-                out.append({
-                    "file_id": int(file_id),
-                    "is64": r["is64"], "big_endian": r["big"],
-                    "e_type": r["e_type"], "machine": r["machine"],
-                    "n_phdrs": r["n_phdrs"], "n_loads": r["n_loads"],
-                    "n_sections": r["n_sections"],
-                    "sizes_ok": r["sizes_ok"],
-                    "entry_in_exec_load": r["entry_ok"],
-                    "total_filesz": r["total_filesz"],
-                    "names_md5": hashlib.md5("|".join(
-                        r["names"]).encode()).hexdigest(),
-                })
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             ELF_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, ELF_MANIFEST_SCHEMA)

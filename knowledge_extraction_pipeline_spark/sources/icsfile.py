@@ -15,36 +15,12 @@ exactly per the RFC:
 
 Anything else (UNTIL, BYMONTHDAY, INTERVAL>1 weekly, timezone-local
 DTSTART) is an honest NotImplementedError — wrong calendar math is
-worse than refusal. The oracle re-derives every occurrence from the
-pure (cal_id, seed) spec formulas with Python datetime, so a folding
-slip, a weekday mixup or an off-by-one week flips the hash. Extraction
-runs as mapInPandas over an opaque binary column."""
+worse than refusal."""
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
 from datetime import datetime, timedelta
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-ICS_FILE_SCHEMA = T.StructType([
-    T.StructField("cal_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-ICS_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("cal_id", T.LongType()),
-    T.StructField("uid", T.StringType()),
-    T.StructField("freq", T.StringType()),
-    T.StructField("n_occurrences", T.IntegerType()),
-    T.StructField("first_occ", T.StringType()),
-    T.StructField("last_occ", T.StringType()),
-    T.StructField("occ_md5", T.StringType()),
-    T.StructField("summary_len", T.IntegerType()),
-])
 
 _BYDAY_SETS = ["MO,WE,FR", "TU,TH", "SA,SU", "MO,TU,WE,TH,FR"]
 _DAY_CODES = ["MO", "TU", "WE", "TH", "FR", "SA", "SU"]  # 0=Monday
@@ -128,12 +104,6 @@ def build_ics(i: int, seed: int = 42) -> bytes:
     return ("\r\n".join(lines) + "\r\n").encode()
 
 
-def synthetic_ics_files(spark: SparkSession, n: int,
-                        seed: int = 42) -> DataFrame:
-    rows = [(i, build_ics(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, ICS_FILE_SCHEMA)
-
-
 # ── reader ──────────────────────────────────────────────────────────────
 
 def _unfold(text: str) -> list[str]:
@@ -182,27 +152,3 @@ def parse_ics(raw: bytes) -> list[dict]:
                     "occurrences": occs,
                     "summary": ev.get("SUMMARY", "")})
     return out
-
-
-def ics_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for cal_id, payload in zip(pdf["cal_id"], pdf["payload"]):
-                for ev in parse_ics(bytes(payload)):
-                    occ = [_fmt(d) for d in ev["occurrences"]]
-                    rows.append({
-                        "cal_id": int(cal_id),
-                        "uid": ev["uid"],
-                        "freq": ev["freq"],
-                        "n_occurrences": len(occ),
-                        "first_occ": occ[0],
-                        "last_occ": occ[-1],
-                        "occ_md5": hashlib.md5(
-                            "|".join(occ).encode()).hexdigest(),
-                        "summary_len": len(ev["summary"]),
-                    })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              ICS_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, ICS_MANIFEST_SCHEMA)

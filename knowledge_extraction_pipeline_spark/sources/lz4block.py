@@ -12,36 +12,11 @@ forward copy, turning offset-1 matches into RLE runs. Fixtures plant
 long single-char runs so the overlap path is exercised in every file;
 golden tests decode HAND-WRITTEN foreign blocks the writer never
 produced, so writer/reader bugs cannot cancel.
-
-The oracle re-derives content columns from the pure (doc_id, seed)
-spec formulas (compressed-size columns come from the pinned writer).
-Runs as mapInPandas over an opaque binary column.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-LZ4_FILE_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-LZ4_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("compressed_bytes", T.IntegerType()),
-    T.StructField("decompressed_bytes", T.IntegerType()),
-    T.StructField("text_md5", T.StringType()),
-    T.StructField("n_sequences", T.IntegerType()),
-    T.StructField("n_matches", T.IntegerType()),
-    T.StructField("n_overlap_matches", T.IntegerType()),
-    T.StructField("max_match_len", T.IntegerType()),
-])
 
 
 def lz4_doc_spec(i: int, seed: int = 42) -> bytes:
@@ -63,10 +38,6 @@ def _length(n: int) -> bytes:
         n -= 255
     out.append(n)
     return bytes(out)
-
-
-def lz4_compress(src: bytes) -> bytes:
-    return lz4_compress_with_stats(src)[0]
 
 
 def lz4_compress_with_stats(src: bytes) -> tuple[bytes, dict]:
@@ -123,16 +94,6 @@ def lz4_compress_with_stats(src: bytes) -> tuple[bytes, dict]:
     return bytes(out), stats
 
 
-def build_lz4(i: int, seed: int = 42) -> bytes:
-    return lz4_compress(lz4_doc_spec(i, seed))
-
-
-def synthetic_lz4_blocks(spark: SparkSession, n: int,
-                         seed: int = 42) -> DataFrame:
-    rows = [(i, build_lz4(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, LZ4_FILE_SCHEMA)
-
-
 # ── reader ──────────────────────────────────────────────────────────────
 
 def _read_len(buf: bytes, pos: int, base: int) -> tuple[int, int]:
@@ -185,23 +146,3 @@ def lz4_decompress(buf: bytes) -> tuple[bytes, dict]:
     return bytes(out), {"n_sequences": n_seq, "n_matches": n_match,
                         "n_overlap_matches": n_overlap,
                         "max_match_len": max_match}
-
-
-def lz4_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                text, st = lz4_decompress(raw)
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "compressed_bytes": len(raw),
-                    "decompressed_bytes": len(text),
-                    "text_md5": hashlib.md5(text).hexdigest(),
-                    **st,
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              LZ4_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, LZ4_MANIFEST_SCHEMA)

@@ -9,36 +9,11 @@ base64 + quoted-printable decoders (never email.parser / base64 /
 quopri). Reference analog: none — the reference ingests loose PDFs
 (core/document_processor.py:91-177); mail shards are an additional
 container class next to tar/zip/gzip.
-
-Extraction runs as mapInPandas over an opaque binary column — one Arrow
-batch of messages in, one part manifest out; messages never pass through
-the driver.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MESSAGE_SCHEMA = T.StructType([
-    T.StructField("msg_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-MIME_PART_SCHEMA = T.StructType([
-    T.StructField("msg_id", T.LongType()),
-    T.StructField("part_idx", T.IntegerType()),
-    T.StructField("content_type", T.StringType()),
-    T.StructField("encoding", T.StringType()),
-    T.StructField("filename", T.StringType()),
-    T.StructField("usize", T.LongType()),
-    T.StructField("content_md5", T.StringType()),
-])
 
 
 def mime_part_spec(msg_id: int,
@@ -231,28 +206,3 @@ def parse_mime_parts(
         out.append((idx, ptype, enc, name, len(content),
                     hashlib.md5(content).hexdigest()))
     return out
-
-
-def synthetic_mime_messages(spark: SparkSession, n: int = 24,
-                            seed: int = 42) -> DataFrame:
-    rows = [(i, bytearray(build_mime(i, seed))) for i in range(n)]
-    return spark.createDataFrame(rows, MESSAGE_SCHEMA)
-
-
-def mime_part_manifest(messages: DataFrame) -> DataFrame:
-    """Message → part manifest, one Arrow batch at a time (same narrow
-    mapInPandas scan shape as the tar/zip/gzip walks)."""
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["msg_id"], pdf["payload"]):
-                for (idx, ptype, enc, name, usize,
-                     md5) in parse_mime_parts(bytes(payload)):
-                    rows.append((mid, idx, ptype, enc, name, usize, md5))
-            yield pd.DataFrame(rows, columns=[
-                "msg_id", "part_idx", "content_type", "encoding",
-                "filename", "usize", "content_md5"])
-
-    return (messages.select("msg_id", "payload")
-            .mapInPandas(process, schema=MIME_PART_SCHEMA))

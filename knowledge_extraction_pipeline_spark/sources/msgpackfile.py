@@ -14,39 +14,10 @@ cannot cancel.
 Fixture records deliberately straddle every encoding boundary: ints at
 127/128/255/256/65535/65536 and 2³², negatives at -32/-33/-128/-129,
 strings at 31/32 chars, arrays at 15/16 elements, maps at 15/16 keys.
-The oracle re-derives all manifest columns from pure (msg_id, seed)
-formulas. Extraction runs as mapInPandas over an opaque binary column.
 """
 
 from __future__ import annotations
 
-import hashlib
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-MP_FILE_SCHEMA = T.StructType([
-    T.StructField("msg_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-MP_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("msg_id", T.LongType()),
-    T.StructField("rec_id", T.LongType()),
-    T.StructField("neg", T.LongType()),
-    T.StructField("name", T.StringType()),
-    T.StructField("name_len", T.IntegerType()),
-    T.StructField("n_tags", T.IntegerType()),
-    T.StructField("tags_md5", T.StringType()),
-    T.StructField("flag", T.BooleanType()),
-    T.StructField("has_nil", T.BooleanType()),
-    T.StructField("big", T.LongType()),
-    T.StructField("meta_hour", T.LongType()),
-    T.StructField("n_extra_keys", T.IntegerType()),
-    T.StructField("payload_bytes", T.IntegerType()),
-])
 
 _ID_EDGES = [0, 127, 128, 255, 256, 65_535, 65_536, 4_294_967_296]
 _NEG_EDGES = [-1, -32, -33, -128, -129, -32_768, -32_769]
@@ -126,12 +97,6 @@ def build_msgpack(i: int, seed: int = 42) -> bytes:
     items += [(f"f{j}", _mp_int(j)) for j in range(s["n_extra"])]
     return (_mp_map_hdr(len(items))
             + b"".join(_mp_str(k) + v for k, v in items))
-
-
-def synthetic_msgpack_files(spark: SparkSession, n: int,
-                            seed: int = 42) -> DataFrame:
-    rows = [(i, build_msgpack(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, MP_FILE_SCHEMA)
 
 
 # ── reader (type-byte driven) ───────────────────────────────────────────
@@ -216,34 +181,3 @@ def decode_msgpack(buf: bytes):
     if pos != len(buf):
         raise ValueError("trailing bytes after msgpack value")
     return v
-
-
-def msgpack_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for msg_id, payload in zip(pdf["msg_id"], pdf["payload"]):
-                raw = bytes(payload)
-                m = decode_msgpack(raw)
-                rows.append({
-                    "msg_id": int(msg_id),
-                    "rec_id": m["rec_id"],
-                    "neg": m["neg"],
-                    "name": m["name"],
-                    "name_len": len(m["name"]),
-                    "n_tags": len(m["tags"]),
-                    "tags_md5": hashlib.md5(
-                        "|".join(m["tags"]).encode()).hexdigest(),
-                    "flag": m["flag"],
-                    "has_nil": "nil" in m and m["nil"] is None,
-                    "big": m["big"],
-                    "meta_hour": m["m"]["hour"],
-                    "n_extra_keys": sum(1 for k in m
-                                        if k.startswith("f")
-                                        and k[1:].isdigit()),
-                    "payload_bytes": len(raw),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              MP_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, MP_MANIFEST_SCHEMA)

@@ -6,8 +6,8 @@ Decode status (honest inventory):
     PPM/P6, and PNG (8-bit RGB/RGBA, all five scanline filters, via the
     stdlib `zlib` — `decode_png`) images; WAV/PCM audio via the stdlib
     `wave` module (`decode_wav`). These run in
-    the engine end to end (synthetic_bmp_media → extract_image_features_real
-    is driver-oracled as `multimodal_bmp_features`).
+    the engine end to end (synthetic_bmp_media →
+    extract_image_features_real).
   * REAL baseline JPEG as well (sources/jpeg.py — pure Python+numpy
     Huffman/DCT, 4:4:4 + 4:2:0 + grayscale + restart markers).
   * STUBBED: progressive/arithmetic JPEG and video FRAME decode raise
@@ -32,13 +32,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("kind", T.StringType()),        # image | audio | video
-    T.StructField("mime", T.StringType()),
-    T.StructField("payload", T.BinaryType()),     # opaque bytes
-    T.StructField("meta", T.MapType(T.StringType(), T.StringType())),
-])
+from .pdf import MEDIA_SCHEMA
 
 IMAGE_FEATURES_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
@@ -193,84 +187,6 @@ def encode_bmp_rle8(idx: np.ndarray, palette: np.ndarray) -> bytes:
             + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 8, 1, len(data),
                           2835, 2835, len(palette), 0))
     return bytes(head + pal + data)
-
-
-def goertzel_power(x, k: int, n: int) -> float:
-    """Goertzel single-bin DFT power |X_k|² via the standard recurrence —
-    a pure sequential float64 loop, so the engine UDF and the oracle
-    generator (same CPython, same libm) produce bit-identical doubles."""
-    import math
-
-    coef = 2.0 * math.cos(2.0 * math.pi * k / n)
-    s1 = s2 = 0.0
-    for v in x:
-        s0 = float(v) + coef * s1 - s2
-        s2, s1 = s1, s0
-    return s1 * s1 + s2 * s2 - coef * s1 * s2
-
-
-def goertzel_peak(x) -> tuple[int, float]:
-    """Scan all bins 1..N//2−1 with goertzel_power; first-max argmax."""
-    n = len(x)
-    best_k, best_p = 0, -1.0
-    for k in range(1, n // 2):
-        p = goertzel_power(x, k, n)
-        if p > best_p:
-            best_k, best_p = k, p
-    return best_k, best_p
-
-
-GOERTZEL_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("n_samples", T.LongType()),
-    T.StructField("peak_bin", T.LongType()),
-    T.StructField("peak_freq_hz", T.DoubleType()),
-    T.StructField("peak_power", T.DoubleType()),
-])
-
-
-def extract_goertzel_features(media: DataFrame) -> DataFrame:
-    """Dominant-tone detection over WAV payloads, mapInPandas-batched: a
-    full Goertzel bin scan (the O(N²) exhaustive single-bin DFT — no FFT
-    reordering, so the float stream is strictly sequential and
-    deterministic) returning the peak bin, its frequency and power."""
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                rate, x = decode_wav(bytes(payload))
-                k, p = goertzel_peak([int(v) for v in x])
-                rows.append((mid, len(x), k, k * rate / len(x), p))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "n_samples", "peak_bin", "peak_freq_hz",
-                "peak_power"])
-
-    return (media.filter(F.col("mime") == "audio/wav")
-            .select("media_id", "payload")
-            .mapInPandas(process, schema=GOERTZEL_SCHEMA))
-
-
-def synthetic_bmp_rle_media(spark: SparkSession, n: int = 24,
-                            seed: int = 42) -> DataFrame:
-    """Deterministic REAL RLE8 BMP table: banded index patterns (long
-    runs) interrupted by literal noise stretches (absolute mode), a
-    formula palette — genuine BI_RLE8 bytes end to end."""
-    rows = []
-    palette = np.stack([(np.arange(256) * 7) % 256,
-                        (np.arange(256) * 29) % 256,
-                        (np.arange(256) * 13) % 256], axis=-1)
-    for i in range(n):
-        w = 17 + (i * 3 + seed) % 14
-        h = 9 + (i * 5 + seed) % 10
-        yy, xx = np.mgrid[0:h, 0:w]
-        idx = np.where((xx + yy + i) % 7 < 5,
-                       ((yy // 2) * 31 + i) % 256,
-                       (xx * 11 + yy * 3 + i * 5) % 256).astype(np.uint8)
-        rows.append((i, "image", "image/bmp",
-                     bytearray(encode_bmp_rle8(idx, palette)),
-                     {"compression": "rle8"}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def decode_ppm(payload: bytes) -> tuple[int, int, np.ndarray]:
@@ -699,31 +615,6 @@ def synthetic_media(spark: SparkSession, n: int = 64, seed: int = 42) -> DataFra
     )
 
 
-def synthetic_tiff_media(spark: SparkSession, n: int = 30,
-                         seed: int = 42) -> DataFrame:
-    """Deterministic REAL TIFF table: genuine strip-organized uncompressed
-    TIFF bytes — RGB rows with varying strip heights, every 5th row an
-    8-bit grayscale image (gray replicates to 3 channels on decode). Pixels
-    are pure formulas of (x, y, id) so the oracle recomputes expected
-    channel means without touching TIFF bytes."""
-    rows = []
-    for i in range(n):
-        w = 13 + (i * 3 + seed) % 10
-        h = 11 + (i * 5 + seed) % 8
-        yy, xx = np.mgrid[0:h, 0:w]
-        if i % 5 == 4:
-            px = ((xx * 9 + yy * 4 + i * 5) % 256).astype(np.uint8)
-        else:
-            px = np.stack([
-                (xx * 2 + yy * 3 + i) % 256,
-                (xx * 5 + yy + i * 7) % 256,
-                (xx + yy * 7 + i * 13) % 256,
-            ], axis=-1).astype(np.uint8)
-        payload = encode_tiff(px, rows_per_strip=2 + i % 5)
-        rows.append((i, "image", "image/tiff", bytearray(payload), {}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
 def _paeth(a: int, b: int, c: int) -> int:
     p = a + b - c
     pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
@@ -843,30 +734,6 @@ def decode_png(payload: bytes) -> tuple[int, int, np.ndarray]:
         prev = line
     px = np.frombuffer(bytes(out), np.uint8).reshape(h, w, ch)
     return w, h, px[:, :, :3].copy()
-
-
-def synthetic_png_media(spark: SparkSession, n: int = 36,
-                        seed: int = 42) -> DataFrame:
-    """Deterministic REAL PNG media table: every row a genuine PNG file
-    (RGB and RGBA alternating, filter types cycling per scanline) whose
-    pixels are pure formulas of (x, y, id) — so an independent fixture can
-    recompute the expected channel means without touching PNG bytes."""
-    rows = []
-    for i in range(n):
-        w = 12 + (i * 3 + seed) % 9
-        h = 12 + (i * 5 + seed) % 7
-        yy, xx = np.mgrid[0:h, 0:w]
-        chans = [
-            (xx * 2 + yy * 3 + i) % 256,
-            (xx * 5 + yy + i * 7) % 256,
-            (xx + yy * 7 + i * 13) % 256,
-        ]
-        if i % 2 == 1:
-            chans.append((xx + yy + i) % 256)  # alpha (dropped on decode)
-        px = np.stack(chans, axis=-1).astype(np.uint8)
-        rows.append((i, "image", "image/png", bytearray(encode_png(px)),
-                     {"filters": "cycled"}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def _lzw_decode(data: bytes, mcs: int) -> list[int]:
@@ -1054,22 +921,6 @@ def decode_gif(payload: bytes) -> tuple[int, int, np.ndarray]:
     raise ValueError("GIF contains no image data")
 
 
-def synthetic_gif_media(spark: SparkSession, n: int = 30,
-                        seed: int = 42) -> DataFrame:
-    """Deterministic REAL GIF media table: palette indices are pure
-    formulas of (x, y, id), so a fixture recomputes expected channel means
-    (through the fixed palette formulas) without touching GIF bytes."""
-    rows = []
-    for i in range(n):
-        w = 14 + (i * 3 + seed) % 11
-        h = 14 + (i * 5 + seed) % 9
-        yy, xx = np.mgrid[0:h, 0:w]
-        idx = ((xx * 11 + yy * 17 + i * 29) % 256).astype(np.uint8)
-        rows.append((i, "image", "image/gif",
-                     bytearray(encode_gif(idx)), {"codec": "lzw"}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
 def encode_mp4_skeleton(duration_s: int, timescale: int,
                         track_codecs: list[str]) -> bytes:
     """Minimal valid ISO-BMFF box tree (ftyp + moov[mvhd + trak[tkhd +
@@ -1165,90 +1016,7 @@ def parse_mp4(payload: bytes) -> tuple[float, int, int, list[str]]:
     return duration / timescale, timescale, n_tracks, codecs
 
 
-VIDEO_META_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("duration_s", T.DoubleType()),
-    T.StructField("timescale", T.IntegerType()),
-    T.StructField("n_tracks", T.IntegerType()),
-    T.StructField("codecs", T.StringType()),
-])
-
-
-def extract_video_metadata(media: DataFrame) -> DataFrame:
-    """mapInPandas container-metadata extraction over video payloads —
-    the real half of video handling (curation filters on duration/codec);
-    frame decode stays behind the ffmpeg stub."""
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                dur, ts, nt, codecs = parse_mp4(bytes(payload))
-                rows.append((mid, dur, ts, nt, ",".join(codecs)))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "duration_s", "timescale", "n_tracks", "codecs"])
-
-    return (media.filter(F.col("kind") == "video")
-            .select("media_id", "payload")
-            .mapInPandas(process, schema=VIDEO_META_SCHEMA))
-
-
-def synthetic_mp4_media(spark: SparkSession, n: int = 24,
-                        seed: int = 42) -> DataFrame:
-    """Deterministic REAL MP4 container table: box trees with
-    formula-derived duration/timescale/track layout."""
-    rows = []
-    for i in range(n):
-        dur = 30 + (i * 7 + seed) % 300
-        ts = (600, 1000, 90000)[i % 3]
-        codecs = [("avc1", "hev1", "av01")[(i + j) % 3]
-                  for j in range(1 + i % 2)]
-        rows.append((i, "video", "video/mp4",
-                     bytearray(encode_mp4_skeleton(dur, ts, codecs)),
-                     {"codec": codecs[0]}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def synthetic_jpeg_media(spark: SparkSession, n: int = 24,
-                         seed: int = 42) -> DataFrame:
-    """Deterministic REAL JPEG media table (sources/jpeg.encode_jpeg):
-    gradient images, alternating 4:4:4 / 4:2:0 subsampling, a grayscale
-    every 4th row, quality varying — genuine baseline JFIF bytes with
-    Annex-K tables, byte stuffing and Huffman entropy data."""
-    from .jpeg import encode_jpeg
-
-    rows = []
-    for i in range(n):
-        w = 24 + (i * 3 + seed) % 17
-        h = 24 + (i * 5 + seed) % 13
-        yy, xx = np.mgrid[0:h, 0:w]
-        q = 85 + (i * 7) % 13
-        if i % 4 == 3:
-            px = ((xx * 2 + yy * 3 + i * 5) % 200 + 20).astype(np.uint8)
-            payload = encode_jpeg(px, quality=q)
-        else:
-            px = np.stack([
-                ((xx * 2 + i * 3) % 200 + 20),
-                ((yy * 3 + i * 7) % 200 + 20),
-                ((xx + yy + i * 11) % 200 + 20),
-            ], axis=-1).astype(np.uint8)
-            payload = encode_jpeg(
-                px, quality=q, subsample="420" if i % 2 else "444")
-        rows.append((i, "image", "image/jpeg", bytearray(payload),
-                     {"quality": str(q)}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
 # ── WEBP container (RIFF) metadata — real chunk walk, stdlib only ────────
-
-WEBP_META_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("format", T.StringType()),      # lossy | lossless
-    T.StructField("has_alpha", T.BooleanType()),
-    T.StructField("chunks", T.StringType()),
-])
-
 
 def _vp8l_header(width: int, height: int, alpha: bool) -> bytes:
     """VP8L bitstream header: signature 0x2F then LSB-first packed
@@ -1350,187 +1118,7 @@ def parse_webp(payload: bytes) -> tuple[int, int, str, bool, list[str]]:
     return width, height, fmt, alpha, chunks
 
 
-def extract_webp_metadata(media: DataFrame) -> DataFrame:
-    """mapInPandas WEBP metadata extraction — Arrow-batched like the other
-    media paths; one Python pass per batch, no per-row UDF."""
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                w, h, fmt, alpha, chunks = parse_webp(bytes(payload))
-                rows.append((mid, w, h, fmt, alpha, ",".join(chunks)))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "width", "height", "format", "has_alpha",
-                "chunks"])
-
-    return (media.filter(F.col("mime") == "image/webp")
-            .select("media_id", "payload")
-            .mapInPandas(process, schema=WEBP_META_SCHEMA))
-
-
-def synthetic_webp_media(spark: SparkSession, n: int = 30,
-                         seed: int = 42) -> DataFrame:
-    """Deterministic REAL WEBP container table: cycles simple-lossless /
-    simple-lossy / extended (alpha, EXIF) layouts with formula dims."""
-    rows = []
-    for i in range(n):
-        w = 16 + (i * 13 + seed) % 1000
-        h = 16 + (i * 29 + seed) % 800
-        mode = i % 3
-        if mode == 0:
-            payload = encode_webp_skeleton(w, h, lossless=True,
-                                           alpha=bool(i % 2))
-        elif mode == 1:
-            payload = encode_webp_skeleton(w, h, lossless=False)
-        else:
-            payload = encode_webp_skeleton(w, h, lossless=False,
-                                           alpha=bool((i // 3) % 2),
-                                           exif=bool(i % 2))
-        rows.append((i, "image", "image/webp", bytearray(payload),
-                     {"mode": ("lossless", "lossy", "extended")[mode]}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
 # ── ICO container (favicon / icon bundles) — real directory walk ─────────
-
-ICO_META_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("entry", T.IntegerType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("bpp", T.IntegerType()),
-    T.StructField("kind", T.StringType()),        # png | bmp
-    T.StructField("bytes_in_res", T.LongType()),
-])
-
-
-def _ico_png_image(width: int, height: int) -> bytes:
-    """Minimal REAL PNG prefix for an ICO entry: 8-byte signature + a
-    well-formed IHDR chunk (u32-BE dims, 8-bit RGBA) + deterministic
-    filler — the parser reads dims from IHDR exactly like a real
-    favicon sniffer; full zlib pixel decode lives in sources' PNG codec
-    and is out of scope for a directory walk."""
-    import struct
-    import zlib
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 6, 0, 0, 0)
-    chunk = (struct.pack(">I", len(ihdr)) + b"IHDR" + ihdr
-             + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr) & 0xFFFFFFFF))
-    return b"\x89PNG\r\n\x1a\n" + chunk + b"\x00" * 8
-
-
-def _ico_bmp_image(width: int, height: int, bpp: int) -> bytes:
-    """ICO-convention BMP payload: a BITMAPINFOHEADER with biHeight
-    DOUBLED (XOR mask + AND mask, per the Windows icon format) and no
-    BITMAPFILEHEADER — exactly what real .ico files embed."""
-    import struct
-
-    return struct.pack("<IiiHHIIiiII", 40, width, 2 * height, 1, bpp,
-                       0, 0, 0, 0, 0, 0) + b"\x00" * 8
-
-
-def encode_ico(entries: list[tuple[int, int, int, str]]) -> bytes:
-    """Minimal REAL ICO container: ICONDIR (reserved=0, type=1, count) +
-    one 16-byte ICONDIRENTRY per image (width/height bytes with the
-    256→0 convention, bit depth, size, offset) + the PNG or
-    ICO-convention-BMP payloads at their recorded offsets."""
-    import struct
-
-    images = [(_ico_png_image(w, h) if kind == "png"
-               else _ico_bmp_image(w, h, bpp))
-              for (w, h, bpp, kind) in entries]
-    header = struct.pack("<HHH", 0, 1, len(entries))
-    offset = len(header) + 16 * len(entries)
-    dir_entries = b""
-    for (w, h, bpp, _kind), img in zip(entries, images):
-        dir_entries += struct.pack(
-            "<BBBBHHII", w % 256, h % 256, 0, 0, 1, bpp, len(img), offset)
-        offset += len(img)
-    return header + dir_entries + b"".join(images)
-
-
-def parse_ico(payload: bytes) -> list[tuple[int, int, int, int, str, int]]:
-    """Real ICO directory parse: validates the ICONDIR (reserved 0,
-    type 1), walks every ICONDIRENTRY, dereferences each image offset
-    and sniffs the payload — PNG (signature + IHDR dims, which OVERRIDE
-    the 1-byte directory dims; that is how >255px icons are stored) or
-    ICO-convention BMP (BITMAPINFOHEADER, biHeight halved back). Rows:
-    (entry, width, height, bpp, kind, bytes_in_res)."""
-    import struct
-
-    if len(payload) < 6:
-        raise ValueError("truncated ICO header")
-    reserved, typ, count = struct.unpack_from("<HHH", payload, 0)
-    if reserved != 0 or typ != 1:
-        raise ValueError("not an ICO container")
-    out = []
-    for i in range(count):
-        off = 6 + 16 * i
-        if off + 16 > len(payload):
-            raise ValueError("truncated ICONDIRENTRY")
-        bw, bh, _cc, _res, _planes, bpp, size, img_off = struct.unpack_from(
-            "<BBBBHHII", payload, off)
-        if img_off + size > len(payload):
-            raise ValueError("ICO image out of range")
-        img = payload[img_off:img_off + size]
-        if img[:8] == b"\x89PNG\r\n\x1a\n":
-            w, h = struct.unpack_from(">II", img, 16)
-            kind = "png"
-        elif len(img) >= 40 and struct.unpack_from("<I", img, 0)[0] == 40:
-            _, w, h2 = struct.unpack_from("<Iii", img, 0)
-            w, h = w, h2 // 2
-            kind = "bmp"
-        else:
-            raise ValueError("unknown ICO image payload")
-        out.append((i, int(w), int(h), int(bpp), kind, int(size)))
-    return out
-
-
-def extract_ico_entries(media: DataFrame) -> DataFrame:
-    """mapInPandas ICO directory extraction — one output row per icon
-    entry, Arrow-batched like the other media paths."""
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                for (e, w, h, bpp, kind, size) in parse_ico(bytes(payload)):
-                    rows.append((mid, e, w, h, bpp, kind, size))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "entry", "width", "height", "bpp", "kind",
-                "bytes_in_res"])
-
-    return (media.filter(F.col("mime") == "image/x-icon")
-            .select("media_id", "payload")
-            .mapInPandas(process, schema=ICO_META_SCHEMA))
-
-
-def ico_fixture_entries(i: int, seed: int = 42) \
-        -> list[tuple[int, int, int, str]]:
-    """Formula entry list for media_id i — shared by the fixture encoder
-    and the oracle so both sides derive identical expected rows."""
-    n_entries = 1 + (i + seed) % 3
-    out = []
-    for e in range(n_entries):
-        w = 16 * (1 + (i * 7 + e * 3) % 20)        # 16..320 → exercises >255
-        h = 16 * (1 + (i * 5 + e * 11) % 16)
-        kind = "png" if (i + e) % 2 == 0 else "bmp"
-        bpp = 32 if kind == "png" else (8, 24, 32)[(i + e) % 3]
-        out.append((w, h, bpp, kind))
-    return out
-
-
-def synthetic_ico_media(spark: SparkSession, n: int = 18,
-                        seed: int = 42) -> DataFrame:
-    """Deterministic REAL ICO container table: 1-3 entries per icon,
-    mixed PNG/BMP payloads, widths beyond the 255 directory-byte limit
-    (PNG IHDR dims override, per the format)."""
-    rows = []
-    for i in range(n):
-        payload = encode_ico(ico_fixture_entries(i, seed))
-        rows.append((i, "image", "image/x-icon", bytearray(payload),
-                     {"n_entries": str(1 + (i + seed) % 3)}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
 
 _TGA_FOOTER = b"\0\0\0\0\0\0\0\0TRUEVISION-XFILE.\0"
 
@@ -1618,44 +1206,6 @@ def decode_tga(payload: bytes) -> tuple[int, int, np.ndarray]:
     if not desc & 0x20:
         px = px[::-1]
     return w, h, px.copy()
-
-
-def synthetic_tga_media(spark: SparkSession, n: int = 30,
-                        seed: int = 42) -> DataFrame:
-    """Deterministic REAL TGA table: genuine 24-bit Targa bytes — run-heavy
-    pixel formulas of (x, y, id) so RLE packets are exercised, alternating
-    raw/RLE and top-down/bottom-up rows. Pixels are pure formulas, so the
-    oracle recomputes expected channel means without touching TGA bytes."""
-    rows = []
-    for i in range(n):
-        w = 12 + (i * 5 + seed) % 15
-        h = 10 + (i * 7 + seed) % 11
-        yy, xx = np.mgrid[0:h, 0:w]
-        px = np.stack([
-            ((xx // 5) * 7 + yy * 3 + i) % 256,
-            ((xx // 3) + yy * 2 + i * 11) % 256,
-            (xx + (yy // 2) * 5 + i * 3) % 256,
-        ], axis=-1).astype(np.uint8)
-        payload = encode_tga(px, rle=(i % 2 == 1), top_down=(i % 3 != 0))
-        rows.append((i, "image", "image/x-tga", bytearray(payload),
-                     {"rle": str(i % 2)}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def synthetic_g711_media(spark: SparkSession, n: int = 24,
-                         seed: int = 42) -> DataFrame:
-    """Deterministic REAL G.711 μ-law WAV table: id-dependent tones
-    companded through ulaw_compress into genuine format-7 RIFF bytes."""
-    rows = []
-    for i in range(n):
-        rate = 8000
-        t = np.arange(320 + (i % 4) * 60)
-        freq = 180.0 + (i * 53 + seed) % 500
-        x = (np.sin(2 * np.pi * freq * t / rate) * 15000).astype("<i2")
-        rows.append((i, "audio", "audio/basic",
-                     bytearray(encode_wav_ulaw(rate, x)),
-                     {"codec": "g711u"}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def encode_qoi(px: np.ndarray) -> bytes:
@@ -1766,30 +1316,6 @@ def decode_qoi(payload: bytes) -> tuple[int, int, np.ndarray]:
     return w, h, flat[:, :3].reshape(h, w, 3).copy()
 
 
-def synthetic_qoi_media(spark: SparkSession, n: int = 30,
-                        seed: int = 42) -> DataFrame:
-    """Deterministic REAL QOI table: genuine spec-1.0 QOI bytes over pixel
-    formulas of (x, y, id) shaped to exercise every op class — smooth
-    gradients (DIFF/LUMA), flat patches (RUN), repeated colors (INDEX) and
-    hard jumps (literal RGB); every third image is RGBA."""
-    rows = []
-    for i in range(n):
-        w = 13 + (i * 5 + seed) % 12
-        h = 11 + (i * 7 + seed) % 10
-        yy, xx = np.mgrid[0:h, 0:w]
-        base = [
-            (xx + yy + i) % 256,                       # smooth → DIFF
-            ((xx // 6) * 40 + i * 11) % 256,           # flat runs → RUN
-            ((xx % 4) * 61 + (yy % 3) * 97 + i) % 256,  # few colors → INDEX
-        ]
-        if i % 3 == 0:
-            base.append(((xx * 29 + yy * 53 + i * 7) % 256))  # alpha
-        px = np.stack(base, axis=-1).astype(np.uint8)
-        rows.append((i, "image", "image/qoi", bytearray(encode_qoi(px)),
-                     {"channels": str(px.shape[2])}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
 def _pcx_rle(plane_bytes: bytes) -> bytearray:
     """PCX RLE for one scanline-plane: runs of 1..63 equal bytes become
     (0xC0|count, value); a lone byte < 0xC0 is emitted literally, but any
@@ -1872,27 +1398,6 @@ def decode_pcx(payload: bytes) -> tuple[int, int, np.ndarray]:
     arr = np.frombuffer(bytes(raw), dtype=np.uint8).reshape(h, nplanes, bpl)
     return w, h, np.ascontiguousarray(
         arr[:, :, :w].transpose(0, 2, 1))
-
-
-def synthetic_pcx_media(spark: SparkSession, n: int = 30,
-                        seed: int = 42) -> DataFrame:
-    """Deterministic REAL PCX table: genuine version-5 RLE bytes over pixel
-    formulas of (x, y, id) — horizontal bands (long runs), diagonal
-    gradients (literal-heavy) and values ≥ 0xC0 (forced 1-runs); odd
-    widths exercise the even bytes-per-line padding."""
-    rows = []
-    for i in range(n):
-        w = 15 + (i * 3 + seed) % 11          # odd widths common
-        h = 9 + (i * 5 + seed) % 12
-        yy, xx = np.mgrid[0:h, 0:w]
-        px = np.stack([
-            ((yy // 3) * 50 + i * 13) % 256,          # bands → runs
-            (xx * 11 + yy * 17 + i) % 256,            # gradient → literals
-            np.where((xx + i) % 5 == 0, 0xC8, (xx * 2 + i) % 0xC0),
-        ], axis=-1).astype(np.uint8)
-        rows.append((i, "image", "image/pcx", bytearray(encode_pcx(px)),
-                     {"planes": "3"}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 def _vlq(n: int) -> bytes:
@@ -2018,52 +1523,6 @@ def midi_note_formula(i: int) -> tuple[list[tuple[int, int, int, int]], int]:
     return notes, 500000 - i * 1000
 
 
-def synthetic_midi_media(spark: SparkSession, n: int = 30) -> DataFrame:
-    """Deterministic REAL MIDI table: genuine format-1 SMF bytes (tempo
-    track + running-status note track) from midi_note_formula."""
-    rows = []
-    for i in range(n):
-        notes, tempo = midi_note_formula(i)
-        rows.append((i, "audio", "audio/midi",
-                     bytearray(encode_midi(notes, tempo_us=tempo)),
-                     {"notes": str(len(notes))}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-MIDI_FEATURES_SCHEMA = T.StructType([
-    T.StructField("media_id", T.LongType()),
-    T.StructField("n_tracks", T.LongType()),
-    T.StructField("division", T.LongType()),
-    T.StructField("tempo_us", T.LongType()),
-    T.StructField("n_notes", T.LongType()),
-    T.StructField("total_ticks", T.LongType()),
-    T.StructField("pitch_sum", T.LongType()),
-    T.StructField("vel_sum", T.LongType()),
-])
-
-
-def extract_midi_features(media: DataFrame) -> DataFrame:
-    """REAL SMF parse over binary payloads, mapInPandas-batched: Arrow
-    ships the bytes, parse_midi walks chunks/VLQs/running status, only
-    integer features come back."""
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                f = parse_midi(bytes(payload))
-                rows.append((mid, f["n_tracks"], f["division"],
-                             f["tempo_us"], f["n_notes"], f["total_ticks"],
-                             f["pitch_sum"], f["vel_sum"]))
-            yield pd.DataFrame(rows, columns=[
-                "media_id", "n_tracks", "division", "tempo_us", "n_notes",
-                "total_ticks", "pitch_sum", "vel_sum"])
-
-    return (media.filter(F.col("mime") == "audio/midi")
-            .select("media_id", "payload")
-            .mapInPandas(process, schema=MIDI_FEATURES_SCHEMA))
-
-
 def alaw_compress(x: np.ndarray) -> np.ndarray:
     """G.711 A-law companding, int16 → uint8 (ITU-T G.711 encoder,
     vectorized): 12-bit magnitude segments, 4-bit mantissa, even-bit
@@ -2179,38 +1638,6 @@ def decode_aiff(payload: bytes) -> tuple[int, np.ndarray]:
     return rate, np.frombuffer(raw, dtype=">i2").astype("<i2")
 
 
-def synthetic_aiff_media(spark: SparkSession, n: int = 24,
-                         seed: int = 42) -> DataFrame:
-    """Deterministic REAL AIFF table: id-dependent tones written as
-    genuine big-endian FORM/AIFF bytes, odd sample rates exercising the
-    80-bit extended-float encode."""
-    rows = []
-    for i in range(n):
-        rate = (8000, 11025, 22050, 44100)[i % 4]
-        t = np.arange(280 + (i % 5) * 64)
-        freq = 160.0 + (i * 47 + seed) % 520
-        x = (np.sin(2 * np.pi * freq * t / rate) * 13000).astype("<i2")
-        rows.append((i, "audio", "audio/aiff",
-                     bytearray(encode_aiff(rate, x)),
-                     {"rate": str(rate)}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def synthetic_alaw_media(spark: SparkSession, n: int = 24,
-                         seed: int = 42) -> DataFrame:
-    """Deterministic REAL G.711 A-law WAV table (format-6 RIFF bytes)."""
-    rows = []
-    for i in range(n):
-        rate = 8000
-        t = np.arange(300 + (i % 4) * 70)
-        freq = 190.0 + (i * 59 + seed) % 480
-        x = (np.sin(2 * np.pi * freq * t / rate) * 14000).astype("<i2")
-        rows.append((i, "audio", "audio/basic",
-                     bytearray(encode_wav_alaw(rate, x)),
-                     {"codec": "g711a"}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
 # ───────────────────── Sun Raster (.ras / rast) ─────────────────────
 
 _RAS_MAGIC = 0x59A66A95
@@ -2298,26 +1725,6 @@ def decode_rast(payload: bytes) -> tuple[int, int, np.ndarray]:
     return w, h, px.copy()
 
 
-def synthetic_rast_media(spark: SparkSession, n: int = 30,
-                         seed: int = 42) -> DataFrame:
-    """Deterministic REAL Sun Raster table: even ids RT_STANDARD, odd ids
-    RT_BYTE_ENCODED (the RLE stream genuinely compresses — rows carry
-    horizontal runs). Pixels are pure formulas of (x, y, id)."""
-    rows = []
-    for i in range(n):
-        w = 14 + (i * 3 + seed) % 11
-        h = 12 + (i * 5 + seed) % 9
-        yy, xx = np.mgrid[0:h, 0:w]
-        px = np.stack([
-            ((xx // 4) * 9 + yy * 7 + i) % 256,   # runs of 4 -> RLE bites
-            ((xx // 3) * 5 + yy * 11 + i * 2) % 256,
-            ((xx // 5) * 3 + yy + i * 13) % 256,
-        ], axis=-1).astype(np.uint8)
-        rows.append((i, "image", "image/x-sun-raster",
-                     bytearray(encode_rast(px, rle=bool(i % 2))), {}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
 # ───────────────────── NetPBM PAM (P7) ─────────────────────
 
 def encode_pam(px: np.ndarray) -> bytes:
@@ -2355,28 +1762,6 @@ def decode_pam(payload: bytes) -> tuple[int, int, np.ndarray]:
         g = data.reshape(h, w)
         return w, h, np.stack([g, g, g], axis=-1).copy()
     return w, h, data.reshape(h, w, 3).copy()
-
-
-def synthetic_pam_media(spark: SparkSession, n: int = 28,
-                        seed: int = 42) -> DataFrame:
-    """Deterministic REAL PAM table: every 4th row GRAYSCALE (depth 1),
-    the rest RGB; pixels are pure formulas of (x, y, id)."""
-    rows = []
-    for i in range(n):
-        w = 11 + (i * 7 + seed) % 13
-        h = 9 + (i * 3 + seed) % 11
-        yy, xx = np.mgrid[0:h, 0:w]
-        if i % 4 == 0:
-            px = ((xx * 5 + yy * 9 + i * 3) % 256).astype(np.uint8)
-        else:
-            px = np.stack([
-                (xx * 2 + yy * 13 + i) % 256,
-                (xx * 11 + yy * 3 + i * 5) % 256,
-                (xx + yy * 7 + i * 9) % 256,
-            ], axis=-1).astype(np.uint8)
-        rows.append((i, "image", "image/x-portable-arbitrarymap",
-                     bytearray(encode_pam(px)), {}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 # ───────────────────── SGI image (.rgb / .sgi) ─────────────────────
@@ -2486,25 +1871,6 @@ def decode_sgi(payload: bytes) -> tuple[int, int, np.ndarray]:
     if ch == 1:
         px = np.repeat(px, 3, axis=2)
     return w, h, px.copy()
-
-
-def synthetic_sgi_media(spark: SparkSession, n: int = 26,
-                        seed: int = 42) -> DataFrame:
-    """Deterministic REAL SGI table: even ids verbatim, odd ids RLE
-    (pixel formulas carry horizontal runs so the RLE genuinely bites)."""
-    rows = []
-    for i in range(n):
-        w = 13 + (i * 5 + seed) % 12
-        h = 10 + (i * 7 + seed) % 9
-        yy, xx = np.mgrid[0:h, 0:w]
-        px = np.stack([
-            ((xx // 5) * 11 + yy * 3 + i) % 256,
-            ((xx // 4) * 7 + yy * 5 + i * 3) % 256,
-            ((xx // 6) * 13 + yy + i * 7) % 256,
-        ], axis=-1).astype(np.uint8)
-        rows.append((i, "image", "image/x-sgi",
-                     bytearray(encode_sgi(px, rle=bool(i % 2))), {}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
 
 
 # ───────────────────── Amiga IFF ILBM ─────────────────────
@@ -2631,46 +1997,7 @@ def decode_ilbm(payload: bytes) -> tuple[int, int, np.ndarray]:
     return w, h, px
 
 
-def synthetic_ilbm_media(spark: SparkSession, n: int = 24,
-                         seed: int = 42) -> DataFrame:
-    """Deterministic REAL ILBM table: 16-color index patterns with
-    horizontal runs (ByteRun1 bites); even ids uncompressed, odd ids
-    compressed."""
-    rows = []
-    for i in range(n):
-        w = 17 + (i * 5 + seed) % 14
-        h = 9 + (i * 7 + seed) % 8
-        yy, xx = np.mgrid[0:h, 0:w]
-        idx = (((xx // 4) * 3 + yy * 5 + i) % 16).astype(np.uint8)
-        rows.append((i, "image", "image/x-ilbm",
-                     bytearray(encode_ilbm(idx, compress=bool(i % 2))),
-                     {}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
 # ───────────────── NetPBM ASCII (P1 / P2 / P3) ─────────────────
-
-def encode_pnm_ascii(px: np.ndarray, kind: int, maxval: int = 255,
-                     note: str = "synthetic") -> bytes:
-    """Genuine ASCII netpbm bytes: P1 bitmap (no maxval, 1 = black),
-    P2 graymap, P3 pixmap — with an embedded comment line and tokens
-    wrapped at irregular widths so parsers can't rely on one-row-per-line
-    layout."""
-    h, w = px.shape[:2]
-    toks = [str(int(v)) for v in px.reshape(-1)]
-    lines, cur = [], []
-    for t in toks:
-        cur.append(t)
-        if sum(len(x) + 1 for x in cur) > 35 + (kind * 7) % 17:
-            lines.append(" ".join(cur))
-            cur = []
-    if cur:
-        lines.append(" ".join(cur))
-    hdr = f"P{kind}\n# {note}\n{w} {h}\n"
-    if kind != 1:
-        hdr += f"{maxval}\n"
-    return (hdr + "\n".join(lines) + "\n").encode("ascii")
-
 
 def decode_pnm_ascii(payload: bytes) -> tuple[int, int, np.ndarray]:
     """Hand-rolled ASCII netpbm parse: a whitespace tokenizer that drops
@@ -2712,30 +2039,3 @@ def decode_pnm_ascii(payload: bytes) -> tuple[int, int, np.ndarray]:
         g = vals.reshape(h, w)
         return w, h, np.stack([g, g, g], axis=-1).copy()
     return w, h, vals.reshape(h, w, 3).copy()
-
-
-def synthetic_pnm_ascii_media(spark: SparkSession, n: int = 27,
-                              seed: int = 42) -> DataFrame:
-    """Deterministic ASCII netpbm table cycling P1/P2/P3; P2/P3 rows
-    alternate maxval 255 and 15 (so the scaling path is exercised);
-    pixels are pure formulas of (x, y, id)."""
-    rows = []
-    for i in range(n):
-        w = 9 + (i * 5 + seed) % 11
-        h = 7 + (i * 3 + seed) % 9
-        yy, xx = np.mgrid[0:h, 0:w]
-        kind = 1 + i % 3
-        maxval = 15 if i % 2 == 0 else 255
-        if kind == 1:
-            px = ((xx + yy + i) % 2).astype(np.uint8)
-        elif kind == 2:
-            px = ((xx * 5 + yy * 9 + i * 3) % (maxval + 1)).astype(np.uint8)
-        else:
-            px = np.stack([
-                (xx * 2 + yy * 13 + i) % (maxval + 1),
-                (xx * 11 + yy * 3 + i * 5) % (maxval + 1),
-                (xx + yy * 7 + i * 9) % (maxval + 1),
-            ], axis=-1).astype(np.uint8)
-        rows.append((i, "image", "image/x-portable-anymap-ascii",
-                     bytearray(encode_pnm_ascii(px, kind, maxval)), {}))
-    return spark.createDataFrame(rows, MEDIA_SCHEMA)

@@ -13,10 +13,6 @@ flips every page). Every 4th file carries one deliberately corrupted
 page CRC, making the verifier's failure path part of the pinned
 result. Version != 0 and truncations are honestly refused.
 
-The oracle re-derives every manifest column from the pure
-ogg_file_spec / paginate_stream formulas. Extraction runs as
-mapInPandas over an opaque binary column — fully distributed.
-
 Reference analog: none (the reference ingests PDFs only,
 core/document_processor.py:91-177); this is the engine's multimodal
 extension surface.
@@ -24,30 +20,8 @@ extension surface.
 
 from __future__ import annotations
 
-import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-OGG_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-OGG_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("n_pages", T.IntegerType()),
-    T.StructField("n_streams", T.IntegerType()),
-    T.StructField("n_packets", T.IntegerType()),
-    T.StructField("n_bad_crc", T.IntegerType()),
-    T.StructField("n_continued_pages", T.IntegerType()),
-    T.StructField("n_nogranule_pages", T.IntegerType()),
-    T.StructField("total_payload_bytes", T.LongType()),
-    T.StructField("packets_md5", T.StringType()),
-])
 
 _MAXSEG = 5          # lacing values per page (tiny → forces spanning)
 
@@ -156,12 +130,6 @@ def build_ogg(i: int, seed: int = 42) -> bytes:
     return b"".join(out)
 
 
-def synthetic_oggs(spark: SparkSession, n: int,
-                   seed: int = 42) -> DataFrame:
-    rows = [(i, build_ogg(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, OGG_FILE_SCHEMA)
-
-
 # ── reader ──────────────────────────────────────────────────────────────
 
 def parse_ogg(raw: bytes) -> dict:
@@ -218,33 +186,3 @@ def parse_ogg(raw: bytes) -> dict:
     if any(c is not None for c in carry.values()):
         raise ValueError("unterminated packet at end of stream")
     return {"pages": pages, "packets": packets}
-
-
-def ogg_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                r = parse_ogg(bytes(payload))
-                pages, packets = r["pages"], r["packets"]
-                joined = b"|".join(
-                    b"|".join(packets[s]) for s in sorted(packets))
-                rows.append({
-                    "file_id": int(file_id),
-                    "n_pages": len(pages),
-                    "n_streams": len({p["serial"] for p in pages}),
-                    "n_packets": sum(len(v) for v in packets.values()),
-                    "n_bad_crc": sum(1 for p in pages
-                                     if not p["crc_ok"]),
-                    "n_continued_pages": sum(1 for p in pages
-                                             if p["continued"]),
-                    "n_nogranule_pages": sum(1 for p in pages
-                                             if p["granule"] == -1),
-                    "total_payload_bytes": sum(p["plen"]
-                                               for p in pages),
-                    "packets_md5": hashlib.md5(joined).hexdigest(),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              OGG_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, OGG_MANIFEST_SCHEMA)

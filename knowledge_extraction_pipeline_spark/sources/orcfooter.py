@@ -11,43 +11,18 @@ StripeInformation {5 numberOfRows}, Type {1 kind, 3 fieldNames} and
 ColumnStatistics {1 numberOfValues, 2 intStatistics (sint64 zigzag
 min/max/sum), 4 stringStatistics (min/max/total length)}.
 
-Stripe SPLIT POINTS are writer policy, not content — so the manifest
-pins only the invariant the reader can verify (Σ stripe rows = total
+Stripe SPLIT POINTS are writer policy, not content — so the walker
+reports only the invariant the reader can verify (Σ stripe rows = total
 rows) plus content-determined values (row count, field names, int and
-string column statistics); the oracle's stripe count comes from
+string column statistics); tests cross-check the stripe count against
 pyarrow's OWN ORCFile reader, an implementation independent of this
-walker. Extraction runs as mapInPandas over an opaque binary column.
+walker.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
 
 from .protobuf import _unzigzag, _walk
-
-ORC_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-ORC_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("n_rows", T.LongType()),
-    T.StructField("n_stripes", T.IntegerType()),
-    T.StructField("stripes_consistent", T.BooleanType()),
-    T.StructField("field_names", T.StringType()),
-    T.StructField("k_min", T.LongType()),
-    T.StructField("k_max", T.LongType()),
-    T.StructField("k_sum", T.LongType()),
-    T.StructField("v_min", T.StringType()),
-    T.StructField("v_max", T.StringType()),
-    T.StructField("v_total_len", T.LongType()),
-])
-
 
 def orc_file_spec(i: int, seed: int = 42) -> list[tuple[int, str]]:
     """Deterministic logical rows (k, v); k goes negative so the sint64
@@ -70,12 +45,6 @@ def build_orc(i: int, seed: int = 42) -> bytes:
     orc.write_table(t, buf, compression="uncompressed",
                     stripe_size=4096)
     return buf.getvalue()
-
-
-def synthetic_orc_files(spark: SparkSession, n: int,
-                        seed: int = 42) -> DataFrame:
-    rows = [(i, build_orc(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, ORC_FILE_SCHEMA)
 
 
 # ── reader (tail walk via the generic protobuf tag stream) ──────────────
@@ -117,29 +86,3 @@ def parse_orc_footer(raw: bytes) -> dict:
         out["v_max"] = strs.get(2, [b""])[0].decode()
         out["v_total_len"] = _unzigzag(strs.get(3, [0])[0])
     return out
-
-
-def orc_footer_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                p = parse_orc_footer(bytes(payload))
-                rows.append({
-                    "file_id": int(file_id),
-                    "n_rows": p["n_rows"],
-                    "n_stripes": len(p["stripe_rows"]),
-                    "stripes_consistent":
-                        sum(p["stripe_rows"]) == p["n_rows"],
-                    "field_names": ",".join(p["field_names"]),
-                    "k_min": p.get("k_min"),
-                    "k_max": p.get("k_max"),
-                    "k_sum": p.get("k_sum"),
-                    "v_min": p.get("v_min"),
-                    "v_max": p.get("v_max"),
-                    "v_total_len": p.get("v_total_len"),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              ORC_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, ORC_MANIFEST_SCHEMA)

@@ -16,36 +16,10 @@ per-row-group row counts (row groups are pinned by an explicit
 row_group_size), and int64 column min/max statistics decoded from their
 8-byte little-endian plain encoding. Byte offsets, compressed sizes and
 created_by are writer-version artifacts and deliberately excluded.
-
-Extraction runs as mapInPandas over an opaque binary column — one Arrow
-batch of parquet files in, one row-group manifest out.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-PQ_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-PQ_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("n_leaf_cols", T.IntegerType()),
-    T.StructField("schema_cols", T.StringType()),
-    T.StructField("total_rows", T.LongType()),
-    T.StructField("n_row_groups", T.IntegerType()),
-    T.StructField("rg_idx", T.IntegerType()),
-    T.StructField("rg_rows", T.LongType()),
-    T.StructField("k_num_values", T.LongType()),
-    T.StructField("rg_k_min", T.LongType()),
-    T.StructField("rg_k_max", T.LongType()),
-])
 
 ROW_GROUP_SIZE = 50
 
@@ -72,12 +46,6 @@ def build_parquet(i: int, seed: int = 42) -> bytes:
     buf = io.BytesIO()
     pq.write_table(t, buf, row_group_size=ROW_GROUP_SIZE)
     return buf.getvalue()
-
-
-def synthetic_parquet_files(spark: SparkSession, n: int,
-                            seed: int = 42) -> DataFrame:
-    rows = [(i, build_parquet(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, PQ_FILE_SCHEMA)
 
 
 # ── thrift compact protocol walker ──────────────────────────────────────
@@ -200,29 +168,3 @@ def parse_footer(raw: bytes) -> dict:
         rgs.append({"num_rows": rg.get(3), "cols": cols})
     return {"version": fmd.get(1), "num_rows": fmd.get(3),
             "leaf_names": names, "row_groups": rgs}
-
-
-def parquet_footer_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                p = parse_footer(bytes(payload))
-                for gi, rg in enumerate(p["row_groups"]):
-                    kc = rg["cols"].get("k", {})
-                    rows.append({
-                        "file_id": int(file_id),
-                        "n_leaf_cols": len(p["leaf_names"]),
-                        "schema_cols": ",".join(p["leaf_names"]),
-                        "total_rows": p["num_rows"],
-                        "n_row_groups": len(p["row_groups"]),
-                        "rg_idx": gi,
-                        "rg_rows": rg["num_rows"],
-                        "k_num_values": kc.get("num_values"),
-                        "rg_k_min": kc.get("min"),
-                        "rg_k_max": kc.get("max"),
-                    })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              PQ_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, PQ_MANIFEST_SCHEMA)

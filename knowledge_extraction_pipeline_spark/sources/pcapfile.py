@@ -12,37 +12,11 @@ carries a deliberately corrupted checksum, so the verifier's failure
 path is part of the pinned result — a parser that skips verification
 flips the hash. A golden test pins the checksum routine to the classic
 textbook header (sum b1e6).
-
-The oracle re-derives every manifest column from the pure (file_id,
-seed) spec formulas. Extraction runs as mapInPandas over an opaque
-binary column — fully distributed.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-PCAP_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-PCAP_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("n_packets", T.IntegerType()),
-    T.StructField("n_udp", T.IntegerType()),
-    T.StructField("n_bad_checksum", T.IntegerType()),
-    T.StructField("n_src_ips", T.IntegerType()),
-    T.StructField("total_payload_bytes", T.LongType()),
-    T.StructField("payload_md5", T.StringType()),
-    T.StructField("max_ts_usec", T.LongType()),
-])
 
 
 def pcap_file_spec(i: int, seed: int = 42) -> list[dict]:
@@ -101,12 +75,6 @@ def build_pcap(i: int, seed: int = 42) -> bytes:
     return bytes(out)
 
 
-def synthetic_pcaps(spark: SparkSession, n: int,
-                    seed: int = 42) -> DataFrame:
-    rows = [(i, build_pcap(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, PCAP_FILE_SCHEMA)
-
-
 # ── reader ──────────────────────────────────────────────────────────────
 
 def parse_pcap(raw: bytes) -> list[dict]:
@@ -150,28 +118,3 @@ def parse_pcap(raw: bytes) -> list[dict]:
             pkt["payload"] = data[ihl + 8:ihl + udp_len]
         pkts.append(pkt)
     return pkts
-
-
-def pcap_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                pkts = parse_pcap(bytes(payload))
-                joined = b"|".join(p["payload"] for p in pkts)
-                rows.append({
-                    "file_id": int(file_id),
-                    "n_packets": len(pkts),
-                    "n_udp": sum(1 for p in pkts if p["proto"] == 17),
-                    "n_bad_checksum": sum(1 for p in pkts
-                                          if not p["ck_ok"]),
-                    "n_src_ips": len({p["src"] for p in pkts}),
-                    "total_payload_bytes": sum(len(p["payload"])
-                                               for p in pkts),
-                    "payload_md5": hashlib.md5(joined).hexdigest(),
-                    "max_ts_usec": max(p["ts_usec"] for p in pkts),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              PCAP_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, PCAP_MANIFEST_SCHEMA)

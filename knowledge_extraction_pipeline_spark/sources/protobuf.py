@@ -12,46 +12,15 @@ fields it has no schema for, by wire type alone). Writer-order freedom is
 exercised too: odd messages serialize their fields in reverse order,
 which a tag-driven reader must not care about.
 
-The oracle re-derives every manifest column from the pure (msg_id, seed)
-spec formulas — so a varint continuation slip, a zigzag sign mixup, a
-packed-run misparse or a wrong skip length flips the hash. A golden-bytes
+A golden-bytes
 unit test (tests/test_protobuf.py) pins the writer to spec-known
 encodings (e.g. varint 300 = 0xAC 0x02) so writer/reader bugs cannot
 cancel.
-
-Extraction runs as mapInPandas over an opaque binary column — one Arrow
-batch of message blobs in, one manifest out. No driver involvement.
 """
 
 from __future__ import annotations
 
-import hashlib
 from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-MSG_SCHEMA = T.StructType([
-    T.StructField("msg_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-MANIFEST_SCHEMA = T.StructType([
-    T.StructField("msg_id", T.LongType()),
-    T.StructField("rec_id", T.LongType()),
-    T.StructField("name", T.StringType()),
-    T.StructField("score", T.LongType()),
-    T.StructField("flags", T.LongType()),
-    T.StructField("meta_hour", T.IntegerType()),
-    T.StructField("meta_tag", T.StringType()),
-    T.StructField("n_tags", T.IntegerType()),
-    T.StructField("tags_md5", T.StringType()),
-    T.StructField("vals_sum", T.LongType()),
-    T.StructField("big", T.LongType()),
-    T.StructField("n_unknown", T.IntegerType()),
-    T.StructField("payload_bytes", T.IntegerType()),
-])
 
 
 def message_spec(i: int, seed: int = 42) -> dict:
@@ -132,12 +101,6 @@ def build_message(i: int, seed: int = 42) -> bytes:
     if i % 2 == 1:
         parts = parts[::-1]
     return b"".join(parts)
-
-
-def synthetic_messages(spark: SparkSession, n: int,
-                       seed: int = 42) -> DataFrame:
-    rows = [(i, build_message(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, MSG_SCHEMA)
 
 
 # ── reader (tag-driven; never sees the writer's layout) ────────────────
@@ -226,35 +189,3 @@ def parse_message(buf: bytes) -> dict:
         else:
             out["n_unknown"] += 1
     return out
-
-
-def message_manifest(blobs: DataFrame) -> DataFrame:
-    """(msg_id, payload) → one manifest row per message, via mapInPandas
-    (Arrow batches of blobs in, manifest out — fully distributed)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for msg_id, payload in zip(pdf["msg_id"], pdf["payload"]):
-                buf = bytes(payload)
-                m = parse_message(buf)
-                rows.append({
-                    "msg_id": int(msg_id),
-                    "rec_id": m["rec_id"],
-                    "name": m["name"],
-                    "score": m["score"],
-                    "flags": m["flags"],
-                    "meta_hour": m["meta_hour"],
-                    "meta_tag": m["meta_tag"],
-                    "n_tags": len(m["tags"]),
-                    "tags_md5": hashlib.md5(
-                        "|".join(m["tags"]).encode()).hexdigest(),
-                    "vals_sum": sum(m["vals"]),
-                    "big": m["big"],
-                    "n_unknown": m["n_unknown"],
-                    "payload_bytes": len(buf),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, MANIFEST_SCHEMA)

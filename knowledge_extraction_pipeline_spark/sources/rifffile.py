@@ -13,10 +13,6 @@ the actual count of video chunks and the verdict pinned per file.
 Big-endian RIFX and non-AVI RIFF forms (e.g. WAVE) are honestly
 refused rather than half-parsed.
 
-The oracle re-derives every manifest column from the pure
-avi_file_spec formulas. Extraction runs as mapInPandas over an opaque
-binary column — fully distributed.
-
 Reference analog: none (the reference ingests PDFs only,
 core/document_processor.py:91-177); this extends the engine's
 multimodal surface next to the MP4 box walk.
@@ -26,32 +22,6 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-AVI_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-AVI_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("n_streams", T.IntegerType()),
-    T.StructField("total_frames", T.IntegerType()),
-    T.StructField("n_frame_chunks", T.IntegerType()),
-    T.StructField("frames_match", T.BooleanType()),
-    T.StructField("n_audio_chunks", T.IntegerType()),
-    T.StructField("n_odd_padded", T.IntegerType()),
-    T.StructField("has_idx1", T.BooleanType()),
-    T.StructField("idx_ok", T.BooleanType()),
-    T.StructField("movi_bytes", T.LongType()),
-    T.StructField("frames_md5", T.StringType()),
-])
 
 
 def avi_file_spec(i: int, seed: int = 42) -> dict:
@@ -135,12 +105,6 @@ def build_avi(i: int, seed: int = 42) -> bytes:
         idx = _chunk(b"idx1", b"".join(entries))
     body = b"AVI " + hdrl + movi + idx
     return b"RIFF" + struct.pack("<I", len(body)) + body
-
-
-def synthetic_avis(spark: SparkSession, n: int,
-                   seed: int = 42) -> DataFrame:
-    rows = [(i, build_avi(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, AVI_FILE_SCHEMA)
 
 
 # ── reader ──────────────────────────────────────────────────────────────
@@ -229,23 +193,3 @@ def parse_avi(raw: bytes) -> dict:
         "frames_md5": hashlib.md5(b"|".join(frames_data)).hexdigest(),
         "stream_types": stream_types,
     }
-
-
-def avi_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                r = parse_avi(bytes(payload))
-                rows.append({
-                    "file_id": int(file_id),
-                    **{k: r[k] for k in
-                       ("width", "height", "n_streams", "total_frames",
-                        "n_frame_chunks", "frames_match",
-                        "n_audio_chunks", "n_odd_padded", "has_idx1",
-                        "idx_ok", "movi_bytes", "frames_md5")},
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              AVI_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, AVI_MANIFEST_SCHEMA)

@@ -13,42 +13,14 @@ glyph ids, cross-checked against maxp's glyph count. CFF ('OTTO'),
 TrueType collections ('ttcf') and cmap formats other than 4 are
 honestly refused.
 
-The oracle re-derives every manifest column from the pure
-sfnt_file_spec formulas. Extraction runs as mapInPandas over an
-opaque binary column — fully distributed.
-
 Reference analog: none; fonts are a real corpus payload (PDF and web
 archives embed them) and this is their container discipline.
 """
 
 from __future__ import annotations
 
-import hashlib
 import struct
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-SFNT_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-SFNT_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("n_tables", T.IntegerType()),
-    T.StructField("search_plan_ok", T.BooleanType()),
-    T.StructField("units_per_em", T.IntegerType()),
-    T.StructField("num_glyphs", T.IntegerType()),
-    T.StructField("n_segments", T.IntegerType()),
-    T.StructField("table_checksums_ok", T.BooleanType()),
-    T.StructField("file_checksum_ok", T.BooleanType()),
-    T.StructField("magic_ok", T.BooleanType()),
-    T.StructField("probe_glyph_sum", T.LongType()),
-    T.StructField("names_md5", T.StringType()),
-])
 
 PROBES = "ABCDE"
 
@@ -160,12 +132,6 @@ def build_sfnt(i: int, seed: int = 42) -> bytes:
     return bytes(raw)
 
 
-def synthetic_sfnts(spark: SparkSession, n: int,
-                    seed: int = 42) -> DataFrame:
-    rows = [(i, build_sfnt(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, SFNT_FILE_SCHEMA)
-
-
 # ── reader ──────────────────────────────────────────────────────────────
 
 def parse_sfnt(raw: bytes) -> dict:
@@ -255,29 +221,3 @@ def parse_sfnt(raw: bytes) -> dict:
         "magic_ok": magic == 0x5F0F3CF5, "probe_sum": probe_sum,
         "names": names,
     }
-
-
-def sfnt_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                r = parse_sfnt(bytes(payload))
-                out.append({
-                    "file_id": int(file_id),
-                    "n_tables": r["n_tables"],
-                    "search_plan_ok": r["plan_ok"],
-                    "units_per_em": r["upem"],
-                    "num_glyphs": r["num_glyphs"],
-                    "n_segments": r["n_segments"],
-                    "table_checksums_ok": r["sums_ok"],
-                    "file_checksum_ok": r["file_ok"],
-                    "magic_ok": r["magic_ok"],
-                    "probe_glyph_sum": r["probe_sum"],
-                    "names_md5": hashlib.md5(
-                        "|".join(r["names"]).encode()).hexdigest(),
-                })
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             SFNT_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, SFNT_MANIFEST_SCHEMA)

@@ -14,10 +14,6 @@ exact across engines. Measured and Z-aware shape types (11..28) and
 wrong file codes are honestly refused; record-length and
 file-length-in-words mismatches raise.
 
-The oracle re-derives every manifest column from the pure
-shp_file_spec formulas. Extraction runs as mapInPandas over an
-opaque binary column — fully distributed.
-
 Reference analog: none; sits beside the geohash / Hilbert rows as
 the ingestion side of the engine's geospatial surface.
 """
@@ -26,30 +22,6 @@ from __future__ import annotations
 
 import hashlib
 import struct
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-SHP_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-SHP_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("n_records", T.IntegerType()),
-    T.StructField("n_points_total", T.IntegerType()),
-    T.StructField("n_polylines", T.IntegerType()),
-    T.StructField("n_polygons", T.IntegerType()),
-    T.StructField("n_null", T.IntegerType()),
-    T.StructField("file_bbox_ok", T.BooleanType()),
-    T.StructField("record_bboxes_ok", T.BooleanType()),
-    T.StructField("file_len_ok", T.BooleanType()),
-    T.StructField("coord_sum", T.LongType()),
-    T.StructField("coords_md5", T.StringType()),
-])
 
 
 def shp_file_spec(i: int, seed: int = 42) -> list[dict]:
@@ -117,12 +89,6 @@ def build_shp(i: int, seed: int = 42) -> bytes:
                        float(fy1))
     hdr += struct.pack("<4d", 0.0, 0.0, 0.0, 0.0)
     return hdr + body
-
-
-def synthetic_shps(spark: SparkSession, n: int,
-                   seed: int = 42) -> DataFrame:
-    rows = [(i, build_shp(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, SHP_FILE_SCHEMA)
 
 
 # ── reader ──────────────────────────────────────────────────────────────
@@ -198,16 +164,3 @@ def parse_shp(raw: bytes) -> dict:
         "coords_md5": hashlib.md5(
             "|".join(coord_stream).encode()).hexdigest(),
     }
-
-
-def shp_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                r = parse_shp(bytes(payload))
-                out.append({"file_id": int(file_id), **r})
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             SHP_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, SHP_MANIFEST_SCHEMA)

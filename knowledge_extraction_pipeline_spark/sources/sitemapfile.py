@@ -8,44 +8,12 @@ XML — a reader that skips decoding emits wrong URLs), ISO lastmod
 dates range-checked, <priority> parsed as an EXACT e1 integer (no
 float round-trip), per-spec limits enforced (<= 50000 URLs),
 unknown child elements counted-and-skipped, and <sitemapindex>
-files honestly refused rather than mis-walked as urlsets. Extracted
-locs are pushed through the SAME canonicalizer the frontier uses
-(functions/urltools), tying discovery to dedup.
-
-The oracle re-derives every manifest column from the pure
-sitemap_file_spec formulas. Extraction runs as mapInPandas over an
-opaque binary column — fully distributed.
+files honestly refused rather than mis-walked as urlsets.
 """
 
 from __future__ import annotations
 
-import hashlib
 import re
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-from knowledge_extraction_pipeline_spark.functions.urltools import (
-    canonicalize_url,
-)
-
-SITEMAP_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-SITEMAP_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("n_urls", T.IntegerType()),
-    T.StructField("n_with_lastmod", T.IntegerType()),
-    T.StructField("n_high_priority", T.IntegerType()),
-    T.StructField("n_unknown_children", T.IntegerType()),
-    T.StructField("n_canonical_distinct", T.IntegerType()),
-    T.StructField("priority_sum_e1", T.LongType()),
-    T.StructField("locs_md5", T.StringType()),
-])
 
 
 def sitemap_file_spec(i: int, seed: int = 42) -> list[dict]:
@@ -83,12 +51,6 @@ def build_sitemap(i: int, seed: int = 42) -> bytes:
         out.append("</url>")
     out.append("</urlset>")
     return "\n".join(out).encode()
-
-
-def synthetic_sitemaps(spark: SparkSession, n: int,
-                       seed: int = 42) -> DataFrame:
-    rows = [(i, build_sitemap(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, SITEMAP_FILE_SCHEMA)
 
 
 # ── reader ──────────────────────────────────────────────────────────────
@@ -156,32 +118,3 @@ def parse_sitemap(raw: bytes) -> dict:
         if len(urls) > 50000:
             raise ValueError("urlset exceeds 50000 URLs")
     return {"urls": urls, "unknown": unknown}
-
-
-def sitemap_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                r = parse_sitemap(bytes(payload))
-                urls = r["urls"]
-                canon = {canonicalize_url(u["loc"]) for u in urls}
-                out.append({
-                    "file_id": int(file_id),
-                    "n_urls": len(urls),
-                    "n_with_lastmod": sum(1 for u in urls
-                                          if u["lastmod"]),
-                    "n_high_priority": sum(1 for u in urls
-                                           if (u["priority"] or 0)
-                                           >= 8),
-                    "n_unknown_children": r["unknown"],
-                    "n_canonical_distinct": len(canon),
-                    "priority_sum_e1": sum(u["priority"] or 0
-                                           for u in urls),
-                    "locs_md5": hashlib.md5("|".join(
-                        u["loc"] for u in urls).encode()).hexdigest(),
-                })
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             SITEMAP_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, SITEMAP_MANIFEST_SCHEMA)

@@ -9,37 +9,12 @@ Python's decoder — and classifies each defect: overlong, surrogate,
 out-of-range, bare continuation, truncated sequence, illegal byte.
 
 Fixtures plant every defect class deterministically between valid
-multi-byte runs, so the manifest pins the validator's FAILURE taxonomy,
-not just its accept path. The oracle re-derives all counts from the
-pure (doc_id, seed) spec formulas. Runs as mapInPandas over an opaque
-binary column.
+multi-byte runs, so the tests pin the validator's FAILURE taxonomy,
+not just its accept path.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-UTF8_FILE_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-UTF8_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("n_bytes", T.IntegerType()),
-    T.StructField("n_chars", T.IntegerType()),
-    T.StructField("n_ascii", T.IntegerType()),
-    T.StructField("n_2byte", T.IntegerType()),
-    T.StructField("n_3byte", T.IntegerType()),
-    T.StructField("n_4byte", T.IntegerType()),
-    T.StructField("n_errors", T.IntegerType()),
-    T.StructField("first_error_offset", T.IntegerType()),
-    T.StructField("error_kinds", T.StringType()),
-])
 
 _DEFECTS = [
     b"\xc0\xaf",              # overlong 2-byte
@@ -73,12 +48,6 @@ def build_utf8_doc(i: int, seed: int = 42) -> bytes:
     if s["tail_trunc"]:
         out += _DEFECTS[5]
     return bytes(out)
-
-
-def synthetic_utf8_docs(spark: SparkSession, n: int,
-                        seed: int = 42) -> DataFrame:
-    rows = [(i, build_utf8_doc(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, UTF8_FILE_SCHEMA)
 
 
 def check_utf8(buf: bytes) -> dict:
@@ -154,29 +123,3 @@ def check_utf8(buf: bytes) -> dict:
             errors.append((pos, "out_of_range"))
             pos += 1
     return {"counts": counts, "errors": errors}
-
-
-def utf8_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                r = check_utf8(raw)
-                c = r["counts"]
-                errs = r["errors"]
-                rows.append({
-                    "doc_id": int(doc_id),
-                    "n_bytes": len(raw),
-                    "n_chars": sum(c.values()),
-                    "n_ascii": c[1], "n_2byte": c[2],
-                    "n_3byte": c[3], "n_4byte": c[4],
-                    "n_errors": len(errs),
-                    "first_error_offset": errs[0][0] if errs else -1,
-                    "error_kinds": ",".join(sorted({k for _, k
-                                                    in errs})),
-                })
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              UTF8_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, UTF8_MANIFEST_SCHEMA)

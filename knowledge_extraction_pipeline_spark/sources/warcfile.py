@@ -11,12 +11,8 @@ message whose status line and headers are parsed and whose body must
 exactly fill Content-Length minus the HTTP head. warcinfo / request
 / response / resource types are walked; unknown WARC-Types,
 non-1.x versions and digest mismatches (planted in every 5th file's
-second record) are surfaced in the manifest rather than silently
+second record) are surfaced in the parse result rather than silently
 accepted.
-
-The oracle re-derives every manifest column from the pure
-warc_file_spec formulas. Extraction runs as mapInPandas over an
-opaque binary column — fully distributed.
 
 Reference analog: none (the reference ingests local PDFs); this is
 the acquisition surface a 100 TB text pipeline starts from.
@@ -26,28 +22,7 @@ from __future__ import annotations
 
 import base64
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-WARC_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-WARC_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("n_records", T.IntegerType()),
-    T.StructField("n_responses", T.IntegerType()),
-    T.StructField("n_requests", T.IntegerType()),
-    T.StructField("n_bad_digest", T.IntegerType()),
-    T.StructField("n_http_200", T.IntegerType()),
-    T.StructField("total_payload_bytes", T.LongType()),
-    T.StructField("uris_md5", T.StringType()),
-    T.StructField("bodies_md5", T.StringType()),
-])
 
 CRLF = b"\r\n"
 
@@ -110,12 +85,6 @@ def build_warc(i: int, seed: int = 42) -> bytes:
     return bytes(out)
 
 
-def synthetic_warcs(spark: SparkSession, n: int,
-                    seed: int = 42) -> DataFrame:
-    rows = [(i, build_warc(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, WARC_FILE_SCHEMA)
-
-
 # ── reader ──────────────────────────────────────────────────────────────
 
 def parse_warc(raw: bytes) -> list[dict]:
@@ -169,33 +138,3 @@ def parse_warc(raw: bytes) -> list[dict]:
                     raise ValueError("embedded http length mismatch")
         records.append(rec)
     return records
-
-
-def warc_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                rs = parse_warc(bytes(payload))
-                uris = "|".join(r["uri"] or "" for r in rs)
-                bodies = b"|".join(r["http_body"] or b"" for r in rs)
-                out.append({
-                    "file_id": int(file_id),
-                    "n_records": len(rs),
-                    "n_responses": sum(1 for r in rs
-                                       if r["type"] == "response"),
-                    "n_requests": sum(1 for r in rs
-                                      if r["type"] == "request"),
-                    "n_bad_digest": sum(1 for r in rs
-                                        if r["digest_ok"] is False),
-                    "n_http_200": sum(1 for r in rs
-                                      if r["status"] == 200),
-                    "total_payload_bytes": sum(r["len"] for r in rs),
-                    "uris_md5": hashlib.md5(
-                        uris.encode()).hexdigest(),
-                    "bodies_md5": hashlib.md5(bodies).hexdigest(),
-                })
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             WARC_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, WARC_MANIFEST_SCHEMA)

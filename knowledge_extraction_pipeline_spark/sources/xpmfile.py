@@ -11,10 +11,6 @@ wrong row length, unknown pixel key, duplicate color key, and cpp > 2
 are all refused. Transparent pixels are counted via the 'None'
 sentinel.
 
-The oracle re-derives every manifest column from the pure
-xpm_file_spec formulas. Extraction runs as mapInPandas over an opaque
-binary column — fully distributed.
-
 Reference analog: none (the reference ingests PDFs only); this sits
 beside the binary image walks (BMP/PNG/GIF/...) as the text-encoded
 image surface.
@@ -22,30 +18,8 @@ image surface.
 
 from __future__ import annotations
 
-import hashlib
 import re
-from collections.abc import Iterator
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-XPM_FILE_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-XPM_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("file_id", T.LongType()),
-    T.StructField("width", T.IntegerType()),
-    T.StructField("height", T.IntegerType()),
-    T.StructField("n_colors", T.IntegerType()),
-    T.StructField("cpp", T.IntegerType()),
-    T.StructField("n_transparent", T.IntegerType()),
-    T.StructField("index_sum", T.LongType()),
-    T.StructField("palette_md5", T.StringType()),
-    T.StructField("pixels_md5", T.StringType()),
-])
 
 _KEYS1 = "abcdefgh"
 _KEYS2 = ["aa", "ab", "ba", "bb", "ca", "cb", "da", "db"]
@@ -90,12 +64,6 @@ def build_xpm(i: int, seed: int = 42) -> bytes:
         lines.append('"%s",' % row)
     lines.append("};")
     return "\n".join(lines).encode()
-
-
-def synthetic_xpms(spark: SparkSession, n: int,
-                   seed: int = 42) -> DataFrame:
-    rows = [(i, build_xpm(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, XPM_FILE_SCHEMA)
 
 
 # ── reader ──────────────────────────────────────────────────────────────
@@ -146,30 +114,3 @@ def parse_xpm(raw: bytes) -> dict:
         "palette": palette, "n_transparent": n_transparent,
         "index_sum": index_sum, "rows": rows,
     }
-
-
-def xpm_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for file_id, payload in zip(pdf["file_id"], pdf["payload"]):
-                r = parse_xpm(bytes(payload))
-                pal = "|".join(f"{k}={v}"
-                               for k, v in r["palette"].items())
-                pix = "|".join("".join(str(c) for c in row)
-                               for row in r["rows"])
-                out.append({
-                    "file_id": int(file_id),
-                    "width": r["width"], "height": r["height"],
-                    "n_colors": r["n_colors"], "cpp": r["cpp"],
-                    "n_transparent": r["n_transparent"],
-                    "index_sum": r["index_sum"],
-                    "palette_md5": hashlib.md5(
-                        pal.encode()).hexdigest(),
-                    "pixels_md5": hashlib.md5(
-                        pix.encode()).hexdigest(),
-                })
-            yield pd.DataFrame(out, columns=[f.name for f in
-                                             XPM_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, XPM_MANIFEST_SCHEMA)

@@ -12,10 +12,6 @@ zlib.crc32), then jumps over the block region to the 12-byte stream
 header (FD 37 7A 58 5A 00 magic, flags echoed by the footer — the
 echo is CHECKED, plus the header-flags CRC32). Concatenated streams
 (planted: 1-3 per file) exercise the multi-stream loop.
-
-The oracle re-derives every manifest column from the pure (doc_id,
-seed) spec formulas (uncompressed sizes are spec-known; stream/byte
-accounting from the pinned writer). Runs as mapInPandas.
 """
 
 from __future__ import annotations
@@ -23,27 +19,6 @@ from __future__ import annotations
 import lzma
 import struct
 import zlib
-from collections.abc import Iterator
-
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import types as T
-
-XZ_FILE_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("payload", T.BinaryType()),
-])
-
-XZ_MANIFEST_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType()),
-    T.StructField("n_streams", T.IntegerType()),
-    T.StructField("n_blocks", T.IntegerType()),
-    T.StructField("uncompressed_total", T.LongType()),
-    T.StructField("container_bytes", T.IntegerType()),
-    T.StructField("check_type", T.IntegerType()),
-    T.StructField("index_crcs_ok", T.BooleanType()),
-    T.StructField("flags_echo_ok", T.BooleanType()),
-])
 
 
 def xz_doc_spec(i: int, seed: int = 42) -> list[bytes]:
@@ -59,12 +34,6 @@ def build_xz(i: int, seed: int = 42) -> bytes:
         lzma.compress(chunk, format=lzma.FORMAT_XZ,
                       check=lzma.CHECK_CRC32)
         for chunk in xz_doc_spec(i, seed))
-
-
-def synthetic_xz_files(spark: SparkSession, n: int,
-                       seed: int = 42) -> DataFrame:
-    rows = [(i, build_xz(i, seed)) for i in range(n)]
-    return spark.createDataFrame(rows, XZ_FILE_SCHEMA)
 
 
 # ── reader ──────────────────────────────────────────────────────────────
@@ -140,18 +109,3 @@ def parse_xz(raw: bytes) -> dict:
     return {"n_streams": n_streams, "n_blocks": n_blocks,
             "uncompressed_total": unc_total, "check_type": check_type,
             "index_crcs_ok": index_ok, "flags_echo_ok": echo_ok}
-
-
-def xz_manifest(blobs: DataFrame) -> DataFrame:
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                raw = bytes(payload)
-                p = parse_xz(raw)
-                rows.append({"doc_id": int(doc_id),
-                             "container_bytes": len(raw), **p})
-            yield pd.DataFrame(rows, columns=[f.name for f in
-                                              XZ_MANIFEST_SCHEMA.fields])
-
-    return blobs.mapInPandas(run, XZ_MANIFEST_SCHEMA)

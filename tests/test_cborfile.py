@@ -61,17 +61,3 @@ def test_refusals():
         parse_cbor(bytes.fromhex("8102ff"))           # trailing junk
     with pytest.raises(ValueError):
         parse_cbor(build_cbor(0)[:-2])                # truncated
-
-
-def test_b85_charset_matches_stdlib():
-    import base64
-
-    from knowledge_extraction_pipeline_spark.queries import _B85_CS
-    # the in-engine charset must be byte-for-byte the stdlib b85 table
-    probe = bytes(range(0, 256, 7))
-    enc = base64.b85encode(probe[:len(probe) - len(probe) % 4]).decode()
-    assert set(enc) <= set(_B85_CS)
-    # positional check: value 0..84 maps to _B85_CS[i]
-    for v in (0, 1, 84):
-        quad = (v).to_bytes(4, "big")
-        assert base64.b85encode(quad).decode()[-1] == _B85_CS[v % 85]

@@ -1,11 +1,31 @@
-"""Chunking operators (SURVEY §2.5)."""
+"""Chunking / windowing operators (SURVEY §2.5)."""
 
 from pyspark.sql import functions as F
 
 from knowledge_extraction_pipeline_spark.operators.chunking import (
+    context_window,
+    extract_headers_udf,
     merge_small_chunks,
     semantic_chunks,
+    split_paragraphs_udf,
+    split_sentences_udf,
 )
+
+
+def test_sentence_paragraph_header_udfs(spark):
+    df = spark.createDataFrame(
+        [("Dr. Smith et al. proved it. A new method works! Does it scale? Yes.",
+          "para one\n\npara two\n\npara three",
+          "# Title\nbody\n1.2 Methods\nmore\nALL CAPS HEADER\nrest")],
+        "a string, b string, c string")
+    row = df.select(
+        split_sentences_udf("a").alias("s"),
+        split_paragraphs_udf("b").alias("p"),
+        extract_headers_udf("c").alias("h"),
+    ).collect()[0]
+    assert len(row["s"]) == 4 and row["s"][0].startswith("Dr. Smith")
+    assert row["p"] == ["para one", "para two", "para three"]
+    assert len(row["h"]) == 3
 
 
 def test_semantic_chunks_cover_all_turns(spark, transcripts):
@@ -33,3 +53,13 @@ def test_semantic_chunks_cover_all_turns(spark, transcripts):
         F.sum(F.col("last_turn_idx") - F.col("first_turn_idx") + 1).alias("covered"))
     assert spans2.join(turns, "conv_id").filter(
         F.col("covered") != F.col("n")).count() == 0
+
+
+def test_context_window(spark, transcripts):
+    cw = context_window(transcripts.limit(0).unionByName(
+        transcripts.filter(F.col("conv_id") == "conv000000000")), n=1)
+    rows = {r["turn_idx"]: r for r in cw.collect()}
+    mid = sorted(rows)[1]
+    assert rows[mid]["context"].count(rows[mid]["text"]) >= 1
+    # context of turn k contains turn k-1's text
+    assert rows[sorted(rows)[0]]["text"] in rows[mid]["context"]

@@ -1,8 +1,6 @@
 """Training-data prep operators: contamination check, per-domain token
-budgeting, sequence packing, and the crawl-side parsers (robots.txt
-decisions, URL canonicalization, HTML text extraction). Each test pins the
-semantic invariants the oracle queries can't (planted cases, flood guard,
-parallelism invariance)."""
+budgeting, sequence packing. Each test pins the semantic invariants the
+oracle queries can't (planted cases, flood guard, parallelism invariance)."""
 
 from pyspark.sql import Window
 from pyspark.sql import functions as F
@@ -256,78 +254,26 @@ def test_pareto_frontier_dominance_and_ties(spark):
         pareto_frontier_2d(pts, "x", "y", bucket_width=0)
 
 
-def test_ffd_never_beats_capacity_and_beats_next_fit_bins():
-    import pandas as pd
-    from knowledge_extraction_pipeline_spark.operators.packing import (
-        _pack_shard, _pack_shard_ffd)
-    pdf = pd.DataFrame({
-        "shard": [0] * 8, "doc_id": list(range(8)),
-        "n_tokens": [300, 300, 212, 212, 100, 100, 100, 100],
-        "_cap": [512] * 8})
-    nf = _pack_shard(pdf.copy())
-    ffd = _pack_shard_ffd(pdf.copy())
-    assert ffd["bin_fill"].max() <= 512 and nf["bin_fill"].max() <= 512
-    assert ffd["n_bins"].iloc[-1] <= nf["bin"].max() + 1  # FFD ≤ next-fit
-
-
-def test_robots_precedence_and_suppression():
-    from knowledge_extraction_pipeline_spark.sources.robotsfile import (
-        _pattern_matches,
-        build_robots,
-        decide,
-        parse_robots,
-    )
-    # longest match wins; allow wins exact ties
-    parsed = parse_robots(
-        b"User-agent: *\nDisallow: /a/\nAllow: /a/b\n")
-    assert decide(parsed, "x", "/a/b.html")["allowed"] is True
-    assert decide(parsed, "x", "/a/c.html")["allowed"] is False
-    tie = parse_robots(b"User-agent: *\nDisallow: /a/\nAllow: /a/\n")
-    assert decide(tie, "x", "/a/z")["allowed"] is True
-    # a specific group suppresses the fallback entirely
-    p = parse_robots(build_robots(0))      # i=0: kep-bot group exists
-    assert decide(p, "kep-bot", "/cgi-bin/run?q=1")["allowed"] is True
-    assert decide(p, "other-bot", "/cgi-bin/run?q=1")["allowed"] \
-        is False
-    # wildcards and end anchor
-    assert _pattern_matches("/*.php$", "/tmp/x.php")
-    assert not _pattern_matches("/*.php$", "/tmp/x.php3")
-    assert _pattern_matches("/a*b*c", "/aXXbYYc-and-more")
-
-
-def test_url_canonicalizer_grammar():
+def test_interleave_manifest_epoch_balance(spark):
+    """A source with 2x the docs must appear ~2x as often in EVERY prefix
+    of the manifest (epoch balance), global_ix must be a 1..N permutation,
+    and shards must cut at exactly shard_size."""
     import pytest
 
-    from knowledge_extraction_pipeline_spark.functions.urltools import (
-        canonicalize_url as c,
+    from knowledge_extraction_pipeline_spark.operators.text_analysis import (
+        interleave_manifest,
     )
-    assert c("HTTP://Example-3.COM:80/a/b/../c?b=2&a=1#frag") \
-        == "http://example-3.com/a/c?a=1&b=2"
-    assert c("http://e.com/x/y/../../a/c") == "http://e.com/a/c"
-    assert c("http://e.com/../../a") == "http://e.com/a"
+    rows = ([(i, "big") for i in range(20)]
+            + [(100 + i, "small") for i in range(10)])
+    d = spark.createDataFrame(rows, "doc_id long, source string")
+    m = interleave_manifest(d, shard_size=6)
+    got = sorted(((r["global_ix"], r["source"], r["shard"])
+                  for r in m.collect()))
+    assert [g for g, _, _ in got] == list(range(1, 31))
+    # every prefix stays within one doc of the ideal 2:1 ratio
+    for k in range(3, 31, 3):
+        n_big = sum(1 for g, s, _ in got[:k] if s == "big")
+        assert abs(n_big - 2 * k / 3) <= 1, (k, n_big)
+    assert [sh for _, _, sh in got] == [i // 6 for i in range(30)]
     with pytest.raises(ValueError):
-        c("no-scheme.com/a")
-
-
-def test_html_extract_traps():
-    from knowledge_extraction_pipeline_spark.sources.htmlextract import (
-        build_html,
-        doc_words,
-        expected_text,
-        extract_html,
-    )
-    words = doc_words("alpha beta gamma " + "word " * 40)
-    html = build_html(7, words)
-    extracted, n_tags, n_ent = extract_html(html)
-    # independent derivation, script/style leak trap, head exclusion
-    assert extracted == expected_text(words)
-    assert "leak" not in extracted
-    assert "doc 7" not in extracted
-    m = len(words) - 3
-    assert n_tags == 8 + 2 * (m // 5)
-    assert n_ent == m // 7 + m // 11
-    import pytest
-    with pytest.raises(ValueError):
-        extract_html("<p>unterminated <")
-    with pytest.raises(ValueError):
-        extract_html("bad &unknown; entity")
+        interleave_manifest(d, shard_size=0)

@@ -17,6 +17,22 @@ def embs(spark):
     return spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
 
 
+def test_exact_dedup_roundtrip(spark):
+    from knowledge_extraction_pipeline_spark.operators.dedup import (
+        exact_dedup_keep_first,
+        exact_duplicates,
+    )
+    d = spark.createDataFrame(
+        [(1, "Hello  world"), (2, "hello world"), (3, "other doc"),
+         (4, "HELLO WORLD "), (5, "other doc")],
+        "doc_id long, text string")
+    groups = exact_duplicates(d).collect()
+    sizes = sorted(r["group_size"] for r in groups)
+    assert sizes == [2, 3]
+    kept = sorted(r["doc_id"] for r in exact_dedup_keep_first(d).collect())
+    assert kept == [1, 3]
+
+
 def test_minhash_vs_exact_jaccard(spark, docs):
     """MinHash+LSH pairs at threshold t must be a subset of exact-Jaccard
     pairs at t (verification is exact), and recall high-sim pairs."""
@@ -265,6 +281,22 @@ def test_ann_metadata_filter(spark, embs):
     assert all(r["id"] in allowed for r in lsh)
 
 
+def test_multimodal_plumbing(spark):
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        extract_image_features,
+        frame_sample_plan,
+        synthetic_media,
+    )
+    media = synthetic_media(spark, 30)
+    feats = extract_image_features(media).collect()
+    assert len(feats) == 10  # every 3rd row is an image
+    for r in feats:
+        assert len(r["embedding"]) == 8 and r["n_bytes"] > 0
+    frames = frame_sample_plan(media, every_n_seconds=5)
+    per_video = frames.groupBy("media_id").count().collect()
+    assert all(r["count"] >= 2 for r in per_video)
+
+
 def test_simhash_flood_guards(spark):
     """SimHash mirror of the MinHash degenerate-corpus guards: a flood of
     identical texts lands on ONE signature — pre_collapse_identical folds it
@@ -379,6 +411,42 @@ def test_lsh_bucket_null_vector_gets_null_bucket(spark):
            d.select("id", lsh_bucket(F.col("v"), 4, dim=3).alias("b"))
            .collect()}
     assert got[1] is not None and got[2] is None
+
+
+def test_multimodal_real_decode(spark):
+    """REAL decoders: BMP pixel round-trip (encode → decode is identity) and
+    WAV PCM decode (stdlib wave) with sane features."""
+    import numpy as np
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        decode_bmp,
+        encode_bmp,
+        decode_ppm,
+        extract_audio_features,
+        extract_image_features_real,
+        synthetic_bmp_media,
+    )
+    rng = np.random.default_rng(7)
+    px = rng.integers(0, 256, size=(13, 21, 3), dtype=np.uint8)
+    w, h, back = decode_bmp(encode_bmp(px))
+    assert (w, h) == (21, 13) and (back == px).all()
+
+    ppm = b"P6\n21 13\n255\n" + px.tobytes()
+    w2, h2, back2 = decode_ppm(ppm)
+    assert (w2, h2) == (21, 13) and (back2 == px).all()
+
+    media = synthetic_bmp_media(spark, 30)
+    feats = {r["media_id"]: r for r in extract_image_features_real(media).collect()}
+    assert len(feats) == 10
+    assert all(0.0 <= f["r_mean"] <= 255.0 and len(f["embedding"]) == 12
+               for f in feats.values())
+
+    audio = {r["media_id"]: r for r in extract_audio_features(media).collect()}
+    assert len(audio) == 10
+    for a in audio.values():
+        assert a["sample_rate"] == 8000 and a["n_samples"] >= 400
+        assert 7000 < a["rms"] < 10000        # sine at amplitude 12000
+        assert a["zero_crossings"] > 10
 
 
 def test_pq_topk_recall(spark):
@@ -591,6 +659,167 @@ def test_ivf_pq_residual_topk_recall(spark):
         assert abs(bf_all[(r["query_id"], r["id"])] - r["cos"]) < 1e-9
 
 
+def test_png_codec_round_trip_and_guards():
+    import numpy as np
+    import pytest
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        decode_image,
+        decode_png,
+        encode_png,
+    )
+    rng = np.random.RandomState(3)
+    # random pixels defeat any filter shortcut; RGB and RGBA; odd sizes
+    for ch in (3, 4):
+        px = rng.randint(0, 256, size=(11, 7, ch), dtype=np.uint8)
+        w, h, back = decode_png(encode_png(px))
+        assert (w, h) == (7, 11)
+        assert np.array_equal(back, px[:, :, :3])
+    # dispatch recognizes the PNG signature
+    w, h, _ = decode_image(encode_png(px))
+    assert (w, h) == (7, 11)
+    with pytest.raises(ValueError):
+        decode_png(b"not a png")
+    # 16-bit / interlaced stay honestly unsupported
+    import struct
+    import zlib
+    ihdr = struct.pack(">IIBBBBB", 2, 2, 16, 2, 0, 0, 0)
+    bad = (b"\x89PNG\r\n\x1a\n"
+           + struct.pack(">I", len(ihdr)) + b"IHDR" + ihdr
+           + struct.pack(">I", zlib.crc32(b"IHDR" + ihdr)))
+    with pytest.raises(NotImplementedError):
+        decode_png(bad)
+
+
+def test_tiff_codec_round_trip_and_guards():
+    import struct
+
+    import numpy as np
+    import pytest
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        decode_image,
+        decode_tiff,
+        encode_tiff,
+    )
+    rng = np.random.RandomState(7)
+    # random pixels, strip heights spanning multi-strip / single-strip
+    # (single strip exercises the inline-value IFD path)
+    for rps in (1, 3, 100):
+        px = rng.randint(0, 256, size=(11, 7, 3), dtype=np.uint8)
+        w, h, back = decode_tiff(encode_tiff(px, rows_per_strip=rps))
+        assert (w, h) == (7, 11)
+        assert np.array_equal(back, px)
+    # grayscale replicates to 3 channels
+    g = rng.randint(0, 256, size=(6, 9), dtype=np.uint8)
+    w, h, back = decode_tiff(encode_tiff(g, rows_per_strip=2))
+    assert (w, h) == (9, 6)
+    assert np.array_equal(back, np.repeat(g[:, :, None], 3, axis=2))
+    # dispatch recognizes the TIFF magic
+    w, h, _ = decode_image(encode_tiff(px))
+    assert (w, h) == (7, 11)
+    with pytest.raises(ValueError):
+        decode_tiff(b"not a tiff")
+    # compressed stays honestly unsupported (entry 259 is the 4th; its
+    # value field sits at header(8) + count(2) + 3 entries + tag/type/count)
+    bad = bytearray(encode_tiff(px))
+    off = 8 + 2 + 3 * 12 + 8
+    assert struct.unpack_from("<I", bad, off)[0] == 1
+    struct.pack_into("<I", bad, off, 5)  # LZW
+    with pytest.raises(NotImplementedError):
+        decode_tiff(bytes(bad))
+
+
+def test_gif_lzw_codec_round_trip_and_guards():
+    import numpy as np
+    import pytest
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        _gif_palette,
+        _lzw_decode,
+        _lzw_encode,
+        decode_gif,
+        decode_image,
+        encode_gif,
+    )
+    rng = np.random.RandomState(5)
+    # LZW: random (table fills -> mid-stream CLEAR), constant (deep
+    # sequences), small alphabet with width growth from 3 bits
+    for data, mcs in ((list(rng.randint(0, 256, 6000)), 8),
+                      ([9] * 8000, 8),
+                      (list(rng.randint(0, 4, 3000)), 2)):
+        data = [int(x) for x in data]
+        assert _lzw_decode(_lzw_encode(data, mcs), mcs) == data
+    idx = rng.randint(0, 256, size=(19, 23), dtype=np.uint8)
+    w, h, px = decode_gif(encode_gif(idx))
+    pal = np.array(_gif_palette(), dtype=np.uint8)
+    assert (w, h) == (23, 19)
+    assert np.array_equal(px, pal[idx.astype(np.int32)])
+    w2, h2, _ = decode_image(encode_gif(idx))
+    assert (w2, h2) == (23, 19)
+    with pytest.raises(ValueError):
+        decode_gif(b"JFIF....")
+
+
+def test_mp4_container_parse_and_guards():
+    import struct
+
+    import pytest
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        encode_mp4_skeleton,
+        parse_mp4,
+    )
+    d, ts, nt, codecs = parse_mp4(
+        encode_mp4_skeleton(45, 600, ["av01"]))
+    assert (d, ts, nt, codecs) == (45.0, 600, 1, ["av01"])
+    with pytest.raises(ValueError):
+        parse_mp4(b"RIFF....WEBP")
+    # truncated/malformed box sizes fail loudly, never loop or misread
+    good = encode_mp4_skeleton(45, 600, ["av01"])
+    # ftyp is 24 bytes, so offset 24 is the moov box's size field;
+    # size 4 < 8 is malformed and must fail loudly
+    bad = good[:24] + struct.pack(">I", 4) + good[28:]
+    with pytest.raises(ValueError):
+        parse_mp4(bad)
+
+
+def test_webp_container_parse_and_guards():
+    import struct
+
+    import pytest
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        encode_webp_skeleton,
+        parse_webp,
+    )
+    # simple lossless: dims from the VP8L packed header, alpha bit honored
+    w, h, fmt, alpha, chunks = parse_webp(
+        encode_webp_skeleton(321, 199, lossless=True, alpha=True))
+    assert (w, h, fmt, alpha, chunks) == (321, 199, "lossless", True,
+                                          ["VP8L"])
+    # simple lossy: dims from the VP8 keyframe start code
+    w, h, fmt, alpha, chunks = parse_webp(
+        encode_webp_skeleton(640, 480, lossless=False))
+    assert (w, h, fmt, alpha, chunks) == (640, 480, "lossy", False, ["VP8 "])
+    # extended: VP8X canvas dims win; ALPH/EXIF chunks inventoried
+    w, h, fmt, alpha, chunks = parse_webp(
+        encode_webp_skeleton(1000, 777, lossless=False, alpha=True,
+                             exif=True))
+    assert (w, h, fmt, alpha) == (1000, 777, "lossy", True)
+    assert chunks == ["VP8X", "ALPH", "EXIF", "VP8 "]
+    # odd-sized chunk bodies are padded to even offsets per RIFF
+    odd = encode_webp_skeleton(33, 33, lossless=False, alpha=True)
+    assert parse_webp(odd)[0] == 33
+    with pytest.raises(ValueError):
+        parse_webp(b"not a webp at all")
+    # chunk size overrunning the RIFF extent fails loudly
+    good = bytearray(encode_webp_skeleton(64, 64, lossless=True))
+    struct.pack_into("<I", good, 16, 10_000)  # first chunk's size field
+    with pytest.raises(ValueError):
+        parse_webp(bytes(good))
+
+
 def test_containment_prefix_filter_equals_brute(spark):
     """Containment's contained-side-only prefix filter must emit the EXACT
     directional pair set the all-pairs join emits — lossless pruning, not
@@ -776,6 +1005,124 @@ def test_edit_distance_prefix_filter_equals_brute(spark, docs):
     assert (9001, 9005) not in pairs  # different block never joined
 
 
+def test_tga_codec_round_trip_and_guards():
+    import numpy as np
+    import pytest
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        decode_image,
+        decode_tga,
+        encode_tga,
+    )
+    rng = np.random.RandomState(7)
+    # random pixels defeat any RLE shortcut; run-heavy pixels exercise it
+    rand_px = rng.randint(0, 256, size=(9, 13, 3), dtype=np.uint8)
+    runs_px = np.repeat(rng.randint(0, 256, size=(6, 4, 3),
+                                    dtype=np.uint8), 5, axis=1)
+    for px in (rand_px, runs_px):
+        for rle in (False, True):
+            for top_down in (True, False):
+                w, h, back = decode_tga(
+                    encode_tga(px, rle=rle, top_down=top_down))
+                assert (w, h) == (px.shape[1], px.shape[0])
+                assert np.array_equal(back, px), (rle, top_down)
+    # RLE packets must not cross scanlines: a column-constant image still
+    # round-trips exactly even though runs continue on the next row
+    col_px = np.tile(np.arange(12, dtype=np.uint8).reshape(1, 4, 3),
+                     (5, 1, 1))
+    _, _, back = decode_tga(encode_tga(col_px, rle=True))
+    assert np.array_equal(back, col_px)
+    # dispatch recognizes the 2.0 footer signature
+    w, h, _ = decode_image(encode_tga(rand_px))
+    assert (w, h) == (13, 9)
+    # colormapped / 32-bit stay honestly unsupported
+    hdr = bytearray(encode_tga(rand_px))
+    hdr[2] = 1  # colormapped
+    with pytest.raises(NotImplementedError):
+        decode_tga(bytes(hdr))
+    hdr[2] = 2
+    hdr[16] = 32
+    with pytest.raises(NotImplementedError):
+        decode_tga(bytes(hdr))
+
+
+def test_wav_manual_parse_matches_stdlib():
+    """The hand-rolled RIFF walk must parse 16-bit PCM byte-identically to
+    the stdlib wave module, and handle odd-sized chunks (pad byte) plus
+    chunk orders wave chokes on."""
+    import io
+    import struct
+    import wave as wave_mod
+
+    import numpy as np
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        decode_wav,
+    )
+    rng = np.random.RandomState(11)
+    x = rng.randint(-32768, 32768, size=1237, dtype="<i2")
+    buf = io.BytesIO()
+    with wave_mod.open(buf, "wb") as wf:
+        wf.setnchannels(1)
+        wf.setsampwidth(2)
+        wf.setframerate(22050)
+        wf.writeframes(x.tobytes())
+    payload = buf.getvalue()
+    rate, got = decode_wav(payload)
+    with wave_mod.open(io.BytesIO(payload)) as wf:
+        ref = np.frombuffer(wf.readframes(wf.getnframes()), dtype="<i2")
+        assert rate == wf.getframerate()
+    assert np.array_equal(got, ref)
+    # an odd-sized LIST chunk before fmt: the walker must honor the pad
+    # byte (stdlib wave also tolerates this, but via a different path)
+    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
+    data = x[:9].tobytes()
+    odd = b"LIST\x05\x00\x00\x00INFOx\x00"  # 5 bytes + 1 pad
+    body = (odd + b"fmt " + struct.pack("<I", len(fmt)) + fmt
+            + b"data" + struct.pack("<I", len(data)) + data)
+    payload2 = b"RIFF" + struct.pack("<I", 4 + len(body)) + b"WAVE" + body
+    rate2, got2 = decode_wav(payload2)
+    assert rate2 == 8000 and np.array_equal(got2, x[:9])
+
+
+def test_g711_ulaw_codec_round_trip_and_guards():
+    import numpy as np
+    import pytest
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        decode_wav,
+        encode_wav_ulaw,
+        ulaw_compress,
+        ulaw_expand,
+    )
+    # code-level involution: every byte except 0x7F (negative zero, which
+    # canonicalizes to +0 = 0xFF per G.711) survives expand→compress
+    codes = np.arange(256, dtype=np.uint8)
+    back = ulaw_compress(ulaw_expand(codes))
+    keep = codes != 0x7F
+    assert np.array_equal(back[keep], codes[keep])
+    assert back[~keep][0] == 0xFF
+    # sample-level: companding error is bounded by the segment quantum
+    rng = np.random.RandomState(13)
+    x = rng.randint(-32768, 32768, size=4096).astype(np.int16)
+    y = ulaw_expand(ulaw_compress(x))
+    v = np.minimum(np.abs(x.astype(np.int32)), 32635) + 0x84
+    seg = np.floor(np.log2(v >> 7)).astype(np.int32)
+    assert (np.abs(y.astype(np.int32)
+                   - np.sign(x) * np.minimum(np.abs(x), 32635))
+            <= (1 << (seg + 2))).all()
+    # full file round-trip through the format-7 RIFF writer/reader
+    rate, got = decode_wav(encode_wav_ulaw(8000, x))
+    assert rate == 8000 and np.array_equal(got, y)
+    # guards: non-RIFF and unsupported format codes refuse
+    with pytest.raises(NotImplementedError):
+        decode_wav(b"OggS" + b"\x00" * 40)
+    bad = bytearray(encode_wav_ulaw(8000, x[:4]))
+    bad[20] = 85  # wFormatTag=85 (MP3)
+    with pytest.raises(NotImplementedError):
+        decode_wav(bytes(bad))
+
+
 def test_damerau_matches_duckdb(spark):
     """The Lowrance-Wagner pandas-UDF DP must equal DuckDB's native
     damerau_levenshtein (true DL, not OSA) on random strings — including
@@ -833,3 +1180,254 @@ def test_damerau_prefix_filter_equals_brute(spark, docs):
     assert pairs[(9001, 9002)] == 0
     assert pairs[(9001, 9003)] == 3  # three transpositions cost 3, not 6
     assert (9001, 9005) not in pairs
+
+
+def test_jaro_winkler_matches_duckdb(spark):
+    """The pandas-UDF Jaro-Winkler must be BIT-identical (raw float64, no
+    rounding) to DuckDB's jaro_winkler_similarity, including the 0.7 boost
+    threshold edge and the both-empty → 0.0 convention."""
+    import random
+
+    import duckdb
+
+    from knowledge_extraction_pipeline_spark.operators.dedup import (
+        _jaro_winkler_udf,
+    )
+    random.seed(9)
+    pairs = [("martha", "marhta"), ("dixon", "dicksonx"),
+             ("jellyfish", "smellyfish"), ("", ""), ("a", ""),
+             ("same", "same"), ("abcd", "dcba")]
+    pairs += [("".join(random.choice("abcdef ") for _ in
+                       range(random.randint(1, 30))),
+               "".join(random.choice("abcdef ") for _ in
+                       range(random.randint(1, 30))))
+              for _ in range(200)]
+    df = spark.createDataFrame(pairs, "a string, b string")
+    got = {(r.a, r.b): r.s for r in
+           df.select("a", "b",
+                     _jaro_winkler_udf("a", "b").alias("s")).collect()}
+    con = duckdb.connect()
+    for a, b in pairs:
+        want = con.sql("select jaro_winkler_similarity(?, ?)",
+                       params=[a, b]).fetchone()[0]
+        assert got[(a, b)] == want, (a, b, got[(a, b)], want)
+
+
+def test_jw_length_band_is_exact(spark):
+    """The min/max ≥ 3·(t−0.4)/0.6 − 2 length band must never drop a
+    qualifying pair: banded plan ≡ same plan with the band disabled
+    (threshold 0 band) on a corpus with planted extreme-length pairs."""
+    from knowledge_extraction_pipeline_spark.operators.dedup import (
+        jaro_winkler_pairs,
+    )
+    rows = [(1, "b", "prefix"), (2, "b", "prefix plus a long tail here"),
+            (3, "b", "prefix plut"), (4, "b", "prefix plus"),
+            (5, "b", "x"), (6, "b", "prefixxxxxxxxxxxxxxxxxxxxxxxxxxx")]
+    names = spark.createDataFrame(rows, "id long, blk string, name string")
+    t = 0.92
+    banded = sorted((r.id_a, r.id_b, r.jw) for r in
+                    jaro_winkler_pairs(names, threshold=t).collect())
+    full = sorted(
+        (r.id_a, r.id_b, r.jw) for r in
+        jaro_winkler_pairs(names, threshold=0.0).collect()
+        if r.jw >= t)
+    assert banded == full and banded, (banded, full)
+
+
+def test_qoi_codec_round_trip_and_guards():
+    import numpy as np
+    import pytest
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        decode_image,
+        decode_qoi,
+        encode_qoi,
+    )
+    rng = np.random.RandomState(17)
+    # random pixels force literal ops; RGB and RGBA; odd sizes; 1x1
+    for ch in (3, 4):
+        for shape in ((9, 7), (1, 1), (3, 62 * 2 + 5)):
+            px = rng.randint(0, 256, size=(*shape, ch), dtype=np.uint8)
+            w, h, back = decode_qoi(encode_qoi(px))
+            assert (w, h) == (shape[1], shape[0])
+            assert np.array_equal(back, px[:, :, :3]), (ch, shape)
+    # flat image: exercises >62-length runs split at the cap
+    flat = np.full((10, 40, 3), 200, dtype=np.uint8)
+    _, _, back = decode_qoi(encode_qoi(flat))
+    assert np.array_equal(back, flat)
+    # gradient exercises DIFF/LUMA; few-color tiling exercises INDEX
+    yy, xx = np.mgrid[0:17, 0:23]
+    grad = np.stack([(xx + yy) % 256, (2 * xx) % 256, (3 * yy) % 256],
+                    axis=-1).astype(np.uint8)
+    _, _, back = decode_qoi(encode_qoi(grad))
+    assert np.array_equal(back, grad)
+    # dispatch recognizes the qoif magic
+    w, h, _ = decode_image(encode_qoi(grad))
+    assert (w, h) == (23, 17)
+    with pytest.raises(NotImplementedError):
+        decode_qoi(b"not qoi at all")
+    bad = bytearray(encode_qoi(grad))
+    bad[12] = 7  # channels=7
+    with pytest.raises(NotImplementedError):
+        decode_qoi(bytes(bad))
+
+
+def test_alaw_codec_round_trip_and_guards():
+    import numpy as np
+    import pytest
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        alaw_compress,
+        alaw_expand,
+        decode_wav,
+        encode_wav_alaw,
+    )
+    # A-law is involutive on ALL 256 codes (no negative-zero collapse)
+    codes = np.arange(256, dtype=np.uint8)
+    assert np.array_equal(alaw_compress(alaw_expand(codes)), codes)
+    # sign convention: expanded levels are symmetric and nonzero
+    lv = alaw_expand(codes).astype(int)
+    assert (np.abs(lv) >= 8).all()
+    assert sorted(lv[lv > 0]) == sorted(-lv[lv < 0])
+    # sample-level error bounded by the top-segment half step
+    rng = np.random.RandomState(23)
+    x = rng.randint(-32768, 32768, size=4096).astype(np.int16)
+    y = alaw_expand(alaw_compress(x))
+    assert (np.abs(y.astype(int)
+                   - np.clip(x.astype(int), -32767, 32767)) <= 512).all()
+    rate, got = decode_wav(encode_wav_alaw(8000, x))
+    assert rate == 8000 and np.array_equal(got, y)
+
+
+def test_aiff_codec_round_trip_and_guards():
+    import struct
+
+    import numpy as np
+    import pytest
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        _f80_decode,
+        _f80_encode,
+        decode_aiff,
+        decode_wav,
+        encode_aiff,
+    )
+    # 80-bit extended float: exact for every practical sample rate
+    for rate in (8000, 11025, 16000, 22050, 44100, 48000, 96000, 192000):
+        assert _f80_decode(_f80_encode(rate)) == rate
+    rng = np.random.RandomState(29)
+    x = rng.randint(-32768, 32768, size=1031).astype("<i2")
+    payload = encode_aiff(44100, x)
+    r, got = decode_aiff(payload)
+    assert r == 44100 and np.array_equal(got, x)
+    # dispatch: decode_wav routes FORM payloads to the AIFF parser
+    r2, got2 = decode_wav(payload)
+    assert r2 == 44100 and np.array_equal(got2, x)
+    # AIFC and stereo refuse honestly
+    with pytest.raises(NotImplementedError):
+        decode_aiff(payload[:8] + b"AIFC" + payload[12:])
+    bad = bytearray(payload)
+    off = payload.index(b"COMM") + 8
+    bad[off:off + 2] = struct.pack(">h", 2)  # channels=2
+    with pytest.raises(NotImplementedError):
+        decode_aiff(bytes(bad))
+
+
+def test_pcx_codec_round_trip_and_guards():
+    import numpy as np
+    import pytest
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        decode_image,
+        decode_pcx,
+        encode_pcx,
+    )
+    rng = np.random.RandomState(23)
+    # random pixels (literal-heavy), odd/even widths for the pad path, 1x1
+    for shape in ((9, 7), (1, 1), (12, 16), (5, 63)):
+        px = rng.randint(0, 256, size=(*shape, 3), dtype=np.uint8)
+        w, h, back = decode_pcx(encode_pcx(px))
+        assert (w, h) == (shape[1], shape[0])
+        assert np.array_equal(back, px), shape
+    # flat image: runs capped at 63 and values >= 0xC0 forced into runs
+    flat = np.full((6, 200, 3), 0xC5, dtype=np.uint8)
+    _, _, back = decode_pcx(encode_pcx(flat))
+    assert np.array_equal(back, flat)
+    # dispatch recognizes the 0x0A/version/RLE header
+    w, h, _ = decode_image(encode_pcx(flat))
+    assert (w, h) == (200, 6)
+    # guards: non-RLE encoding byte and unsupported plane count refuse
+    good = bytearray(encode_pcx(flat))
+    bad = bytearray(good)
+    bad[2] = 0
+    with pytest.raises(NotImplementedError):
+        decode_pcx(bytes(bad))
+    bad = bytearray(good)
+    bad[65] = 1  # nplanes=1 (paletted) unsupported
+    with pytest.raises(NotImplementedError):
+        decode_pcx(bytes(bad))
+
+
+def test_midi_codec_round_trip_and_guards():
+    import pytest
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        _vlq,
+        encode_midi,
+        midi_note_formula,
+        parse_midi,
+    )
+    # VLQ edges: 0, 127, 128, 16383, 16384 re-parse through a real track
+    for delta in (0, 127, 128, 16383, 16384, 2097151):
+        f = parse_midi(encode_midi([(delta, 7, 60, 90)]))
+        assert f["total_ticks"] == delta + 7, delta
+    assert _vlq(0) == b"\x00" and _vlq(127) == b"\x7f"
+    assert _vlq(128) == b"\x81\x00" and _vlq(16384) == b"\x81\x80\x00"
+    # formula files: every feature closed-form
+    for i in (0, 7, 13, 29):
+        notes, tempo = midi_note_formula(i)
+        f = parse_midi(encode_midi(notes, tempo_us=tempo))
+        assert f["n_tracks"] == 2 and f["division"] == 480
+        assert f["tempo_us"] == tempo and f["n_notes"] == len(notes)
+        assert f["pitch_sum"] == sum(p for _, _, p, _ in notes)
+        assert f["vel_sum"] == sum(v for _, _, _, v in notes)
+        assert f["total_ticks"] == sum(d + du for d, du, _, _ in notes)
+    with pytest.raises(NotImplementedError):
+        parse_midi(b"RIFFnope")
+
+
+def test_bmp_rle8_codec_round_trip_and_guards():
+    import numpy as np
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        decode_bmp,
+        decode_image,
+        encode_bmp_rle8,
+    )
+    palette = np.stack([(np.arange(256) * 7) % 256,
+                        (np.arange(256) * 29) % 256,
+                        (np.arange(256) * 13) % 256], axis=-1)
+    rng = np.random.RandomState(31)
+    # random indices (absolute-mode heavy) and banded (run-heavy)
+    for shape in ((7, 9), (1, 1), (11, 254), (5, 255)):
+        idx = rng.randint(0, 256, shape).astype(np.uint8)
+        w, h, rgb = decode_bmp(encode_bmp_rle8(idx, palette))
+        assert (w, h) == (shape[1], shape[0])
+        assert np.array_equal(rgb, palette[idx].astype(np.uint8)), shape
+    banded = np.repeat(np.arange(6, dtype=np.uint8), 40).reshape(6, 40)
+    w, h, rgb = decode_image(encode_bmp_rle8(banded, palette))
+    assert (w, h) == (40, 6)
+    # hand-crafted delta escape: 2px run, delta (+2,+1), run — decoder only
+    import struct
+    pal = b"".join(bytes((int(b), int(g), int(r), 0))
+                   for r, g, b in palette)
+    data = bytes((2, 5, 0, 2, 2, 1, 3, 9, 0, 0, 0, 1))
+    off = 14 + 40 + len(pal)
+    payload = (b"BM" + struct.pack("<IHHI", off + len(data), 0, 0, off)
+               + struct.pack("<IiiHHIIiiII", 40, 8, 2, 1, 8, 1, len(data),
+                             2835, 2835, 256, 0) + pal + data)
+    w, h, rgb = decode_bmp(payload)
+    assert (w, h) == (8, 2)
+    # bottom row: two 5s then delta skips (2,1) -> row above, x=4: three 9s
+    assert np.array_equal(rgb[1, 0:2], palette[np.uint8(5)][:3].astype(np.uint8) * np.array([1, 1])[:, None])
+    assert (rgb[0, 4:7] == palette[np.uint8(9)].astype(np.uint8)).all()

@@ -1,11 +1,27 @@
-"""Stage-1 extraction invariants."""
+"""Stage-1 extraction + windowing invariants."""
 
 from pyspark.sql import functions as F
 
 from knowledge_extraction_pipeline_spark.operators.extract import (
     extract_stage,
     mentions,
+    window_turns,
 )
+
+
+def test_per_turn_text_equality_under_stable_ordering(spark, transcripts):
+    """North-rule invariant: windowing by conv_id with stable turn_idx
+    ordering must preserve per-turn text exactly."""
+    w = window_turns(transcripts)
+    back = w.select("conv_id", "turn_idx", "text")
+    diff = transcripts.select("conv_id", "turn_idx", "text").exceptAll(back)
+    assert diff.count() == 0
+    assert back.exceptAll(transcripts.select("conv_id", "turn_idx", "text")).count() == 0
+    # chunk linkage is consistent: next(prev) round-trips
+    a = w.select("conv_id", "chunk_id", "next_chunk_id").filter(F.col("next_chunk_id").isNotNull())
+    b = w.select(F.col("prev_chunk_id").alias("chunk_id"), F.col("chunk_id").alias("next_chunk_id")) \
+         .filter(F.col("chunk_id").isNotNull())
+    assert a.select("chunk_id", "next_chunk_id").exceptAll(b).count() == 0
 
 
 def test_quotes_are_verbatim(spark, transcripts):

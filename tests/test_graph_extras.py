@@ -1,5 +1,4 @@
-"""Graph analytics operators (operators/graph_algos.py) on handcrafted
-graphs with known answers."""
+"""Shortest path + connectivity repair."""
 
 import pytest
 
@@ -10,6 +9,30 @@ def path_edges(spark):
             ("a", "R", "x"), ("x", "R", "d"),   # shortcut a-x-d
             ("z1", "R", "z2")]                  # separate component
     return spark.createDataFrame(rows, "subj string, pred string, obj string")
+
+
+def test_shortest_path(spark, path_edges):
+    from knowledge_extraction_pipeline_spark.operators.graph_algos import (
+        shortest_path,
+    )
+    p = shortest_path(path_edges, "a", "d")
+    assert p == ["a", "x", "d"]
+    assert shortest_path(path_edges, "a", "a") == ["a"]
+    assert shortest_path(path_edges, "a", "z1") is None
+    assert shortest_path(path_edges, "a", "d", max_hops=1) is None
+
+
+def test_repair_connectivity(spark, path_edges):
+    from knowledge_extraction_pipeline_spark.operators.graph_algos import (
+        repair_connectivity,
+    )
+    sims = spark.createDataFrame(
+        [("a", "q", 0.9), ("q", "x", 0.4), ("q", "r", 0.05), ("r", "a", 0.05)],
+        "id_a string, id_b string, sim double")
+    got = {(r["subj"], r["obj"]): r["sim"] for r in
+           repair_connectivity(path_edges, sims).collect()}
+    # q is isolated → best edge (q,a) at 0.9; r is isolated but best sim 0.05 < 0.15
+    assert got == {("q", "a"): 0.9}
 
 
 def test_label_propagation_planted_communities(spark):
@@ -528,6 +551,32 @@ def test_scc_driver_path_matches_distributed(spark):
     assert comp["d"] == comp["e"] == "d"
     assert comp["f"] == "f" and comp["g"] == "g"
     assert comp["x"] == "x" and comp["y"] == "y"
+
+
+def test_dag_layers_driver_path_matches_distributed(spark):
+    """dag_longest_path_layers: the driver relaxation must equal the
+    distributed fixpoint (same integer recurrence, evaluation order can't
+    matter), and a cyclic graph must raise rather than return layers."""
+    import pytest as _pytest
+
+    from knowledge_extraction_pipeline_spark.operators.graph_algos import (
+        dag_longest_path_layers,
+    )
+    dag = spark.createDataFrame(
+        [("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"), ("d", "e"),
+         ("x", "e")],  # diamond a->{b,c}->d->e plus a short side feed x->e
+        "subj string, obj string")
+    drv = sorted(map(tuple, dag_longest_path_layers(dag).collect()))
+    dist = sorted(map(tuple, dag_longest_path_layers(
+        dag, driver_threshold=0).collect()))
+    assert drv == dist
+    assert dict(drv) == {"a": 0, "b": 1, "c": 1, "d": 2, "e": 3, "x": 0}
+    cyc = spark.createDataFrame(
+        [("a", "b"), ("b", "a")], "subj string, obj string")
+    with _pytest.raises(RuntimeError):
+        dag_longest_path_layers(cyc, max_iter=5)
+    with _pytest.raises(RuntimeError):
+        dag_longest_path_layers(cyc, max_iter=5, driver_threshold=0)
 
 
 def test_eigencentrality_core_concentration(spark):

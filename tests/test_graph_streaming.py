@@ -20,6 +20,35 @@ def test_degree_centrality(spark, small_edges):
     assert got == {"a": 3, "b": 2, "c": 2, "d": 1}
 
 
+def _py_pagerank(edges, damping=0.85, iters=100):
+    nodes = sorted({x for e in edges for x in e})
+    out = {}
+    for s, t in edges:
+        out.setdefault(s, []).append(t)
+    n = len(nodes)
+    r = {x: 1.0 / n for x in nodes}
+    for _ in range(iters):
+        dangling = sum(r[x] for x in nodes if x not in out)
+        nr = {x: (1 - damping) / n + damping * dangling / n for x in nodes}
+        for s, ts in out.items():
+            share = r[s] / len(ts)
+            for t in ts:
+                nr[t] += damping * share
+        r = nr
+    return r
+
+
+def test_pagerank_against_power_iteration(spark, small_edges):
+    from knowledge_extraction_pipeline_spark.operators.graph_algos import pagerank
+
+    got = {r["node"]: r["rank"] for r in pagerank(small_edges, max_iter=30).collect()}
+    want = _py_pagerank([("a", "b"), ("b", "c"), ("a", "c"), ("d", "a")])
+    assert got.keys() == want.keys()
+    for k in want:
+        assert abs(got[k] - want[k]) < 1e-3, (k, got[k], want[k])
+    assert abs(sum(got.values()) - 1.0) < 1e-6
+
+
 def test_k_hop(spark, small_edges):
     from knowledge_extraction_pipeline_spark.operators.graph_algos import (
         k_hop_neighborhood,

@@ -60,6 +60,27 @@ def test_driver_union_find_properties(edges):
         assert asn[a] <= a and asn[a] <= b
 
 
+@settings(max_examples=60, deadline=None)
+@given(st.integers(2, 24), st.integers(2, 24), st.integers(1, 30),
+       st.booleans(), st.integers(0, 2**31 - 1))
+def test_tiff_round_trip_property(h, w, rps, gray, seed):
+    """Any 8-bit image, any strip height (including the single-strip inline
+    IFD case), encodes to a TIFF that decodes back pixel-exact."""
+    import numpy as np
+
+    from knowledge_extraction_pipeline_spark.sources.multimodal import (
+        decode_tiff,
+        encode_tiff,
+    )
+    rng = np.random.RandomState(seed % (2**31))
+    shape = (h, w) if gray else (h, w, 3)
+    px = rng.randint(0, 256, size=shape, dtype=np.uint8)
+    ww, hh, back = decode_tiff(encode_tiff(px, rows_per_strip=rps))
+    assert (ww, hh) == (w, h)
+    expect = np.repeat(px[:, :, None], 3, axis=2) if gray else px
+    assert np.array_equal(back, expect)
+
+
 shingle = st.text(alphabet="abcd", min_size=1, max_size=3)
 shingle_sets = st.lists(
     st.frozensets(shingle, min_size=1, max_size=12), min_size=2, max_size=14)

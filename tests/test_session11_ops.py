@@ -1,6 +1,96 @@
-"""Operator-level tests for the bowtie decomposition on a handcrafted
+"""Operator-level tests for the session-11 additions: the gzip member
+walk and MIME multipart walk (corruption / edge paths the happy-path
+driver oracle can't exercise), the bowtie decomposition on a handcrafted
 graph with every class present, and DBSCAN core/border/noise semantics on
 handcrafted vectors."""
+
+import struct
+import zlib
+
+import pytest
+
+from knowledge_extraction_pipeline_spark.sources.archives import (
+    build_gzip_member,
+    gzip_member_spec,
+    parse_gzip_members,
+)
+from knowledge_extraction_pipeline_spark.sources.mime import (
+    build_mime,
+    mime_part_spec,
+    parse_mime_parts,
+)
+
+
+def test_gzip_multimember_roundtrip():
+    spec = gzip_member_spec(5)
+    blob = b"".join(build_gzip_member(*m) for m in spec)
+    rows = parse_gzip_members(blob)
+    assert [(r[1], r[5]) for r in rows] == \
+        [(n, len(c)) for n, c, _, _ in spec]
+    assert all(r[7] == 1 for r in rows)             # crc_ok everywhere
+
+
+def test_gzip_trailer_corruption_flags_crc():
+    spec = gzip_member_spec(2)
+    blobs = [bytearray(build_gzip_member(*m)) for m in spec]
+    blobs[0][-5] ^= 0xFF                            # flip a CRC byte
+    rows = parse_gzip_members(b"".join(bytes(b) for b in blobs))
+    assert rows[0][7] == 0                          # first member flagged
+    assert all(r[7] == 1 for r in rows[1:])         # later members intact
+
+
+def test_gzip_header_crc16_verified():
+    name, content, mtime, _ = gzip_member_spec(1)[0]
+    blob = bytearray(build_gzip_member(name, content, mtime, style=1))
+    assert blob[3] & 0x02                           # FHCRC set
+    # corrupt the FNAME region (inside the CRC16-covered header)
+    at = blob.index(name.encode()) if name.encode() in blob else 20
+    blob[at] ^= 0x01
+    (row,) = parse_gzip_members(bytes(blob))
+    assert row[7] == 0                              # header CRC catches it
+
+
+def test_gzip_bad_magic_raises():
+    blob = bytearray(build_gzip_member(*gzip_member_spec(0)[0]))
+    blob[0] = 0x00
+    with pytest.raises(ValueError, match="magic"):
+        parse_gzip_members(bytes(blob))
+
+
+def test_mime_roundtrip_against_stdlib_writer():
+    for i in (0, 1, 3):
+        spec = mime_part_spec(i)
+        rows = parse_mime_parts(build_mime(i))
+        assert [(r[1], r[2], r[3], r[4]) for r in rows] == \
+            [(ct, enc, name, len(c)) for ct, enc, name, c in spec]
+
+
+def test_mime_qp_soft_breaks_and_escapes():
+    msg = (b"Content-Type: multipart/mixed; boundary=\"bb\"\n"
+           b"\n--bb\n"
+           b"Content-Type: text/plain\n"
+           b"Content-Transfer-Encoding: quoted-printable\n"
+           b"\nab=3Dcd ef=\ngh=09z\n--bb--\n")
+    (row,) = parse_mime_parts(msg)
+    import hashlib
+    assert row[4] == len(b"ab=cd efgh\tz")
+    assert row[5] == hashlib.md5(b"ab=cd efgh\tz").hexdigest()
+
+
+def test_mime_delimiter_owns_preceding_newline():
+    # RFC 2046: the line break before --boundary is part of the delimiter,
+    # so a 7bit body must NOT grow a phantom trailing newline
+    msg = (b"Content-Type: multipart/mixed; boundary=bb\n"
+           b"\n--bb\n"
+           b"Content-Type: text/plain\n"
+           b"\nexact content\n--bb--\n")
+    (row,) = parse_mime_parts(msg)
+    assert row[4] == len(b"exact content")
+
+
+def test_mime_non_multipart_raises():
+    with pytest.raises(ValueError, match="multipart"):
+        parse_mime_parts(b"Content-Type: text/plain\n\nhello")
 
 
 def test_bowtie_every_class(spark):

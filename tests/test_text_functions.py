@@ -4,6 +4,7 @@ from pyspark.sql import functions as F
 
 from knowledge_extraction_pipeline_spark.functions.text import (
     char_shingles,
+    has_citations,
     lang_id,
     normalize_term,
     normalize_term_resolver,
@@ -30,6 +31,13 @@ def test_counts(spark):
     # token estimate: ceil(len/4) per word → 1+1+1+1
     assert _one(spark, token_count, "a bb ccc dddd") == 4
     assert _one(spark, token_count, "supercalifragilistic") == 5
+
+
+def test_citations(spark):
+    assert _one(spark, has_citations, "as shown (Smith et al., 2020) here")
+    assert _one(spark, has_citations, "see refs [1-3] and [7]")
+    assert _one(spark, has_citations, "see Figure 5 for details")
+    assert not _one(spark, has_citations, "no citations in this text at all")
 
 
 def test_lang_id(spark):
@@ -242,3 +250,50 @@ def test_zorder_key_interleaves_and_clusters(spark):
     z = lambda x, y: ((x & 1) | ((y & 1) << 1) | (((x >> 1) & 1) << 2)
                       | (((y >> 1) & 1) << 3))
     assert abs(z(2, 2) - z(3, 3)) < abs(z(0, 0) - z(3, 3))
+
+
+def test_write_zordered_tightens_file_stats(spark, tmp_path):
+    """Z-ordered layout: per-file (x-range x y-range) bounding boxes must
+    cover far less area than a random layout's — that area is exactly what
+    min/max-stat pruning pays for on 2-D predicates."""
+    import pyarrow.parquet as papq
+    from pyspark.sql import functions as F
+
+    from knowledge_extraction_pipeline_spark.functions.layout import (
+        write_zordered,
+    )
+    n = 20_000
+    df = (spark.range(n)
+          .select((F.xxhash64("id") % 1024).alias("x"),
+                  (F.xxhash64(F.col("id") + 7) % 1024).alias("y"))
+          .filter((F.col("x") >= 0) & (F.col("y") >= 0)))
+    plain, zord = str(tmp_path / "plain"), str(tmp_path / "zord")
+    df.repartition(8).write.parquet(plain)
+    write_zordered(df, zord, "x", "y", bits=10, n_files=8)
+
+    def area(path):
+        import glob
+        import os
+        tot = 0
+        for f in glob.glob(os.path.join(path, "*.parquet")):
+            md = papq.read_metadata(f)
+            xs, ys = [], []
+            for rg in range(md.num_row_groups):
+                row = md.row_group(rg)
+                for ci in range(row.num_columns):
+                    col = row.column(ci)
+                    st = col.statistics
+                    if st is None:
+                        continue
+                    name = col.path_in_schema
+                    if name == "x":
+                        xs += [st.min, st.max]
+                    elif name == "y":
+                        ys += [st.min, st.max]
+            if xs and ys:
+                tot += (max(xs) - min(xs) + 1) * (max(ys) - min(ys) + 1)
+        return tot
+    a_plain, a_zord = area(plain), area(zord)
+    # random layout: every file spans ~the full 1024x1024 square;
+    # z-ordered: each file owns a Z-curve segment -> far smaller boxes
+    assert a_zord < a_plain / 2, (a_plain, a_zord)
